@@ -15,7 +15,7 @@ object Bench {
         SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd
           .foreach(_ => ())
         true
-      } catch { case _: Throwable => false }
+      } catch { case e: Throwable => Failure.report("bench", name, e); false }
 
     // dev aid: SPARK_GRAFT_ONLY=q23,q35 restricts the run to matching keys
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
@@ -106,7 +106,7 @@ object Bench {
             SparkEntry.queries(name)(spark, sf1Dir).queryExecution.toRdd
               .foreach(_ => ())
             true
-          } catch { case _: Throwable => false }
+          } catch { case e: Throwable => Failure.report("bench", name, e); false }
         headline.foreach(consume1)
         val r1 = headline.map { name =>
           val t0 = System.nanoTime()

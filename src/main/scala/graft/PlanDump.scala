@@ -27,7 +27,7 @@ object PlanDump {
     Files.createDirectories(Paths.get(outDir))
     val passes = sys.env.getOrElse("SPARK_GRAFT_PLAN_PASSES", "2").toInt
     names.foreach { name =>
-      val full = SparkEntry.queries.keys.find(_.startsWith(name)).getOrElse(name)
+      val full = SparkEntry.resolve(name)
       spark.sparkContext.setJobDescription(full)
       try {
         val df = SparkEntry.queries(full)(spark, sfDir)
@@ -42,8 +42,7 @@ object PlanDump {
         }
         println(f"[plandump] $full%-40s ${ts.map(t => f"$t%.2f").mkString(" ")} s")
       } catch {
-        case e: Throwable =>
-          println(s"[plandump] $full FAILED: ${e.getMessage}")
+        case e: Throwable => Failure.report("plandump", full, e)
       } finally spark.sparkContext.setJobDescription(null)
     }
     spark.stop()

@@ -1,12558 +1,25 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
-import graft.operators.{Dedup, Medallion, Multimodal, Quality, Relational, Sampling, Similarity}
-import graft.sources.{PartitionedLake, Tables, TxLake, VersionedLake}
+import graft.queries.Query
 
-/** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
-  *
-  * Oracle-parity rules (SURVEY §6): identical column aliases both sides;
-  * money aggregates via exact decimal accumulation surfaced as double;
-  * deterministic ORDER BY everywhere; timestamps surfaced as NTZ (naive)
-  * to match DuckDB; event ts (parquet nanos) read as long nanos and
-  * floored to seconds for any time arithmetic.
+/** Driver contract — see SURVEY.md §2 for the inventory. Every query is
+  * declared once, next to its builder, in a family file under
+  * `graft.queries`; the maps here are read from those declarations.
   */
-/** Typed rows for the Dataset-API query (q79). */
-case class OrderRow(o_orderkey: Long, o_custkey: Long, o_totalprice: Double, o_orderstatus: String)
-case class CustomerRow(c_custkey: Long, c_name: String, c_mktsegment: String)
-case class EnrichedOrder(o_orderkey: Long, c_name: String, c_mktsegment: String, o_totalprice: Double)
-
 object SparkEntry {
-
-  private def T(s: SparkSession, dir: String, n: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    Tables.load(s, dir, n)
-  }
-
-  /** Exact decimal sum surfaced as double (deterministic at any parallelism). */
-  private def sumx(c: Column, scale: Int = 2): Column =
-    sum(c.cast(DecimalType(18, scale))).cast("double")
-
-  private def ntz(ts: String): Column = expr(s"TIMESTAMP_NTZ '$ts'")
-
-  /** events.ts (nanos long) floored to epoch seconds. */
-  private val evSec: Column = expr("ts div 1000000000")
-
-  private def evTs: Column = timestamp_seconds(evSec).cast("timestamp_ntz")
-
-  private def evDateId: Column = date_format(evTs, "yyyy-MM-dd")
-
-  // ---------------------------------------------------------------- flagship
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    q07(spark, "/root/testdata/sf0.001")
+    queries("q07_agg_full")(spark, "/root/testdata/sf0.001")
 
-  // ------------------------------------------------ §2.1 reference-surface
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Query.all.map(q => q.name -> q.build).toMap
 
-  private def q01(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events").select(
-      col("event_id"),
-      evTs.as("ts_sec"),
-      col("user_id"),
-      col("event_type"),
-      col("value"),
-      Medallion.parseJson(col("props"),
-        StructType(Seq(StructField("k", IntegerType)))).getField("k").as("k"),
-      evDateId.as("date_id"))
-      .orderBy(col("event_id"))
-
-  private def q02(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "orders")
-      .filter(col("o_orderstatus") === "O")
-      .select(
-        col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        Medallion.bucketize(col("o_totalprice"),
-          Seq(50000.0 -> "low", 150000.0 -> "mid", 300000.0 -> "high"),
-          "vip").as("price_category"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd").as("date_id"))
-      .orderBy(col("o_orderkey"))
-
-  private def q03(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders")
-    def branch(p: String) =
-      o.filter(col("o_orderpriority") === p)
-        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    Medallion.unionBranches(
-      Seq(branch("1-URGENT") -> "urgent", branch("2-HIGH") -> "high"), "branch")
-      .withColumn("region", lit("NA"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  private def q04(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-    def daily(src: DataFrame) = src
-      .groupBy(evDateId.as("date_id"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sumx(col("value")).as("total_value"))
-      .select(col("event_type"), col("n_events"), col("total_value"), col("date_id"))
-    val lake = s"/root/repo/target/scratch/q04_${math.abs(dir.hashCode)}"
-    val full = daily(ev)
-    PartitionedLake.writeAll(full, lake, Seq("date_id"))
-    val maxDate = full.agg(max(col("date_id"))).head().getString(0)
-    val refresh = daily(ev.filter(col("event_type") =!= "error"))
-      .filter(col("date_id") === maxDate)
-    if (refresh.isEmpty)
-      // dynamic overwrite can't delete a partition absent from the frame;
-      // an all-filtered day needs the reference's explicit partition delete
-      PartitionedLake.deletePartition(s, lake, "date_id", maxDate)
-    else
-      PartitionedLake.deleteInsert(refresh, lake, Seq("date_id"))
-    PartitionedLake.read(s, lake)
-      .withColumn("date_id", col("date_id").cast("string"))
-      .select(col("date_id"), col("event_type"), col("n_events"), col("total_value"))
-      .orderBy(col("date_id"), col("event_type"))
-  }
-
-  private def q05(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "part").select(
-      col("p_partkey").cast("long").as("p_partkey"),
-      trim(col("p_name")).as("p_name"),
-      col("p_brand"), col("p_type"),
-      col("p_size").cast("long").as("p_size"),
-      col("p_retailprice").cast(DecimalType(12, 2)).cast("double").as("p_retailprice"))
-      .orderBy(col("p_partkey"))
-
-  private def q06(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders").filter(col("o_orderstatus") === "F")
-    val c = T(s, dir, "customer")
-    val n = T(s, dir, "nation")
-    o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .select(col("o_orderkey"), col("c_name"), col("n_name").as("nation"),
-        col("o_totalprice"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd").as("date_id"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  // ------------------------------------------------ §2.2 core analytics
-
-  private def q07(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "lineitem")
-      .filter(col("l_shipdate") <= ntz("1998-09-02 00:00:00"))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        sumx(col("l_quantity")).as("sum_qty"),
-        sumx(col("l_extendedprice")).as("sum_base_price"),
-        sumx(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 6).as("sum_disc_price"),
-        count(lit(1)).as("count_order"),
-        countDistinct(col("l_orderkey")).as("n_orders"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-
-  private def q08(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "lineitem")
-      .filter(
-        col("l_shipdate") >= ntz("1996-01-01 00:00:00") &&
-          col("l_shipdate") < ntz("1997-01-01 00:00:00") &&
-          col("l_discount").between(0.02, 0.08) &&
-          col("l_quantity") < 25)
-      .agg(
-        sumx(col("l_extendedprice") * col("l_discount"), 6).as("revenue"),
-        count(lit(1)).as("n_rows"))
-
-  private def q09(s: SparkSession, dir: String): DataFrame = {
-    val c = T(s, dir, "customer")
-    val n = T(s, dir, "nation")
-    val r = T(s, dir, "region")
-    c.join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("r_name"), col("n_name"))
-      .agg(count(lit(1)).as("n_customers"), sumx(col("c_acctbal")).as("total_acctbal"))
-      .orderBy(col("r_name"), col("n_name"))
-  }
-
-  private def q10(s: SparkSession, dir: String): DataFrame = {
-    val li = T(s, dir, "lineitem")
-    val o = T(s, dir, "orders").filter(col("o_orderdate") >= ntz("1996-01-01 00:00:00"))
-    val c = T(s, dir, "customer")
-    val su = T(s, dir, "supplier")
-    val n = T(s, dir, "nation")
-    val r = T(s, dir, "region").filter(col("r_name") === "ASIA")
-    li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(su), col("l_suppkey") === col("s_suppkey"))
-      .join(broadcast(n), col("s_nationkey") === col("n_nationkey"))
-      .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("n_name"))
-      .agg(sumx(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 6).as("revenue"))
-      .orderBy(col("revenue").desc, col("n_name"))
-  }
-
-  private def q11(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    T(s, dir, "orders")
-      .withColumn("rn", row_number().over(w))
-      .withColumn("running_total",
-        sum(col("o_totalprice").cast(DecimalType(18, 2)))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          .cast("double"))
-      .filter(col("rn") <= 3)
-      .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"),
-        col("rn"), col("running_total"))
-      .orderBy(col("o_custkey"), col("rn"))
-  }
-
-  private def q12(s: SparkSession, dir: String): DataFrame = {
-    val c = T(s, dir, "customer")
-    val o = T(s, dir, "orders")
-    c.join(o.filter(col("o_orderstatus") === "F"),
-      col("o_custkey") === col("c_custkey"), "left_semi")
-      .join(o.filter(col("o_orderstatus") === "P"),
-        col("o_custkey") === col("c_custkey"), "left_anti")
-      .select(col("c_custkey"), col("c_name"))
-      .orderBy(col("c_custkey"))
-  }
-
-  private def q13(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "orders")
-      .select(col("o_custkey"), col("o_orderpriority"))
-      .distinct()
-      .orderBy(col("o_custkey"), col("o_orderpriority"))
-      .limit(100)
-
-  private def q14(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
-      .groupBy(
-        date_trunc("hour", evTs).cast("timestamp_ntz").as("hour"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("total_value"))
-      .orderBy(col("hour"), col("event_type"))
-
-  private def q15(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("sec"), col("event_id"))
-    T(s, dir, "events")
-      .select(col("user_id"), col("event_id"), evSec.as("sec"))
-      .withColumn("prev", lag(col("sec"), 1).over(w))
-      .withColumn("new_s",
-        when(col("prev").isNull || col("sec") - col("prev") > 1800, 1).otherwise(0))
-      .withColumn("session_id",
-        sum(col("new_s")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("user_id"), col("session_id"))
-      .agg(count(lit(1)).as("n_events"),
-        min(col("sec")).as("start_sec"), max(col("sec")).as("end_sec"))
-      .orderBy(col("user_id"), col("session_id"))
-  }
-
-  private def q16(s: SparkSession, dir: String): DataFrame = {
-    val types = Seq("click", "view", "purchase", "signup", "error")
-    val aggs = types.map(t =>
-      sum(when(col("event_type") === t, 1).otherwise(0)).cast("long").as(s"n_$t")) :+
-      sum(when(col("event_type") === "purchase", col("value").cast(DecimalType(18, 2)))
-        .otherwise(lit(0).cast(DecimalType(18, 2)))).cast("double").as("purchase_value")
-    T(s, dir, "events")
-      .groupBy(col("user_id"))
-      .agg(aggs.head, aggs.tail: _*)
-      .orderBy(col("user_id"))
-  }
-
-  private def q17(s: SparkSession, dir: String): DataFrame = {
-    val c = T(s, dir, "customer")
-    val n = T(s, dir, "nation")
-    val r = T(s, dir, "region")
-    c.join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-      .rollup(col("r_name"), col("n_name"))
-      .agg(count(lit(1)).as("n"), sumx(col("c_acctbal")).as("total_bal"))
-      .select(
-        coalesce(col("r_name"), lit("ALL")).as("region_name"),
-        coalesce(col("n_name"), lit("ALL")).as("nation_name"),
-        col("n"), col("total_bal"))
-      .orderBy(col("region_name"), col("nation_name"))
-  }
-
-  private def q18(s: SparkSession, dir: String): DataFrame =
-    Relational.discretePercentiles(
-      T(s, dir, "orders"), "o_orderpriority", "o_totalprice", "o_orderkey",
-      Seq(0.5, 0.9))
-      .orderBy(col("o_orderpriority"))
-
-  /** Positional inverted index + exact phrase query
-    * ([[graft.operators.TextPipeline.positionalIndex]] /
-    * [[TextPipeline.phraseMatch]]): the corpus indexes once (term-
-    * partitioned position lists), then the phrase — doc 0's own first
-    * two words, so it exists at every SF — resolves by intersecting
-    * shifted position arrays over only the phrase's term rows. The
-    * oracle replays the occurrence count by scanning every adjacent
-    * word pair.
-    */
-  private def q205(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
-    val phrase = docs.filter(col("doc_id") === 0)
-      .select(slice(TF.words(col("text")), 1, 2).as("p"))
-      .head().getSeq[String](0)
-    graft.operators.TextPipeline.phraseMatch(
-      graft.operators.TextPipeline.positionalIndex(docs), phrase)
-      .orderBy(col("doc_id"))
-  }
-
-  /** Line-level boilerplate removal ([[graft.operators.TextPipeline
-    * .lineDedup]]): CCNet-shaped dedup at LINE granularity — any 8-word
-    * line shared by 2+ documents is boilerplate and stripped everywhere,
-    * survivors reassembled in order and fingerprinted. The line
-    * document-frequency aggregate shuffles on the line value; the
-    * reassembly is one per-doc sorted collect. Nothing corpus-global.
-    */
-  private def q211(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.lineDedup(
-      T(s, dir, "documents"), "doc_id", "text", lineWords = 8, maxDocFreq = 2)
-      .orderBy(col("doc_id"))
-
-  /** Winsorization — the outlier-clipping data-prep step: per-group
-    * exact discrete p05/p95 boundaries ([[Relational.discretePercentiles]],
-    * q18's machinery) come back as a METADATA-SIZED broadcast table and
-    * every value clips locally; never a global sort of the facts (q116's
-    * discretize discipline). Raw vs clipped sums in exact decimal.
-    */
-  private def q204(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders")
-      .select(col("o_orderpriority"), col("o_totalprice"), col("o_orderkey"))
-    val bounds = Relational.discretePercentiles(
-      o, "o_orderpriority", "o_totalprice", "o_orderkey", Seq(0.05, 0.95))
-      .select(col("o_orderpriority"), col("p5"), col("p95"))
-    o.join(broadcast(bounds), Seq("o_orderpriority"))
-      .select(col("o_orderpriority"), col("o_totalprice"),
-        least(greatest(col("o_totalprice"), col("p5")), col("p95")).as("w"))
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"), sumx(col("o_totalprice")).as("sum_raw"),
-        sumx(col("w")).as("sum_winsorized"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  private def q19(s: SparkSession, dir: String): DataFrame =
-    Relational.saltedSum(T(s, dir, "events"), "user_id", "value")
-      .orderBy(col("user_id"))
-
-  private def q20(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id"), col("value"), evSec.as("sec"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .groupBy(col("user_id"), evSec.as("csec"))
-      .agg(max(col("event_id")).as("click_id"))
-    Relational.asofJoin(purchases, clicks, "user_id", "sec", "csec", Seq("click_id"))
-      .select(col("user_id"), col("event_id"), col("value"),
-        col("click_id").as("attributed_click"))
-      .orderBy(col("user_id"), col("event_id"))
-  }
-
-  // ------------------------------------------------ §2.3 dedup
-
-  private def q21(s: SparkSession, dir: String): DataFrame =
-    Dedup.exact(T(s, dir, "documents"), "doc_id", "text")
-      .orderBy(col("keep_id"))
-
-  private def q22(s: SparkSession, dir: String): DataFrame =
-    Dedup.minhashAssign(T(s, dir, "documents"), "doc_id", "text")
-
-  private def q23(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
-    // one signature pass, materialized: the listing AND the pair generation
-    // both consume it (recomputing the 64-aggregate pipeline was the single
-    // biggest line in the r1 bench)
-    val sim = Dedup.simhashes(docs, "doc_id", "text").localCheckpoint(true)
-    val pairs = Dedup.simhashNearDupPairsFromSigs(
-      sim.select(col("doc_id").as("id"), col("simhash")))
-    val nearCounts = pairs.select(col("id_a").as("doc_id"))
-      .unionAll(pairs.select(col("id_b").as("doc_id")))
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("n_near"))
-    sim.join(nearCounts, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("simhash"),
-        coalesce(col("n_near"), lit(0L)).as("n_near"))
-      .orderBy(col("doc_id"))
-  }
-
-  private def q24(s: SparkSession, dir: String): DataFrame =
-    Dedup.ngramJaccardTopPairs(T(s, dir, "documents"), "doc_id", "text")
-
-  private def q25(s: SparkSession, dir: String): DataFrame =
-    Similarity.embeddingNearDupPairs(T(s, dir, "embeddings"), "vec_id", "embedding", 64)
-
-  // ------------------------------------------------ §2.4 similarity search
-
-  private def q26(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    Similarity.knnBrute(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", 10)
-  }
-
-  private def q27(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    Similarity.annLsh(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", 64, 5)
-  }
-
-  private def q40(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    Similarity.annIvf(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding")
-  }
-
-  private def q28(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-      .select(col("vec_id"), col("label"), VF.norm(col("embedding")).as("nrm"))
-    val w = Window.partitionBy(col("label")).orderBy(col("nrm").desc, col("vec_id"))
-    val cw = Window.partitionBy(col("label"))
-    emb
-      .withColumn("rnk", row_number().over(w))
-      .withColumn("n_vecs", count(lit(1)).over(cw))
-      .filter(col("rnk") === 1)
-      .select(col("label"), col("n_vecs"), col("vec_id").as("top_norm_vec"))
-      .orderBy(col("label"))
-  }
-
-  // ------------------------------------------------ §2.5 text analysis
-
-  private def q29(s: SparkSession, dir: String): DataFrame = {
-    val d = T(s, dir, "documents")
-    d.select(
-      col("doc_id"),
-      length(col("text")).cast("long").as("n_chars_m"),
-      TF.wordCount(col("text")).as("n_words"),
-      TF.alphaChars(col("text")).as("n_alpha"),
-      TF.punctChars(col("text")).as("n_punct"),
-      TF.stopwordCount(col("text")).as("stop_cnt"),
-      TF.qualityScore(col("text")).as("quality"))
-      .orderBy(col("doc_id"))
-  }
-
-  private def q30(s: SparkSession, dir: String): DataFrame = {
-    val d = T(s, dir, "documents")
-    d.select(
-      col("doc_id"),
-      TF.langScore(col("text"), "en").as("s_en"),
-      TF.langScore(col("text"), "de").as("s_de"),
-      TF.langScore(col("text"), "es").as("s_es"),
-      TF.langScore(col("text"), "fr").as("s_fr"),
-      TF.langId(col("text")).as("lang_pred"),
-      col("lang"))
-      .orderBy(col("doc_id"))
-  }
-
-  private def q31(s: SparkSession, dir: String): DataFrame = {
-    val d = T(s, dir, "documents")
-    d.select(
-      col("doc_id"),
-      TF.wordCount(col("text")).as("ws_tokens"),
-      TF.bpeishTokenCount(col("text")).as("bpe_tokens"),
-      (length(col("text")).cast("double") /
-        TF.bpeishTokenCount(col("text")).cast("double")).as("chars_per_token"))
-      .orderBy(col("doc_id"))
-  }
-
-  private def q32(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents")
-      .select(col("doc_id"), TF.fingerprint(col("text")).as("fp"))
-      .orderBy(col("doc_id"))
-
-  // ------------------------------------------------ §2.6 multimodal
-
-  private def q33(s: SparkSession, dir: String): DataFrame =
-    Multimodal.decodeMeta(s, Multimodal.attachPayload(T(s, dir, "documents")))
-      .toDF()
-      .orderBy(col("doc_id"))
-
-  /** Sketch-based distinct counting: HLL++ `approx_count_distinct` next to
-    * the exact count. At 100 TB the sketch aggregates in fixed memory per
-    * group with map-side combine; no oracle (DuckDB's sketch differs) —
-    * rows-only, with the approx/exact gap asserted in tests.
-    */
-  private def q37(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
-      .groupBy(col("event_type"))
-      .agg(
-        approx_count_distinct(col("user_id")).as("approx_users"),
-        countDistinct(col("user_id")).as("exact_users"),
-        count(lit(1)).as("n"))
-      .orderBy(col("event_type"))
-
-  /** Bucketed co-located join: both sides written bucketed on the join key
-    * (8 buckets here; thousands on a real cluster), so the join needs NO
-    * shuffle of either side — the pre-shuffle is amortized at write time.
-    * This is the pattern for repeated fact⋈fact joins at 100 TB.
-    * The plan's shuffle-freeness is asserted in BucketedJoinSpec.
-    */
-  private def q38(s: SparkSession, dir: String): DataFrame = {
-    val tag = math.abs(dir.hashCode).toString
-    val (to, tc) = (s"graft_q38_orders_$tag", s"graft_q38_customer_$tag")
-    val base = scratch(dir, "q38")
-    T(s, dir, "orders")
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$base/orders")
-      .bucketBy(8, "o_custkey").sortBy("o_custkey")
-      .saveAsTable(to)
-    T(s, dir, "customer")
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$base/customer")
-      .bucketBy(8, "c_custkey").sortBy("c_custkey")
-      .saveAsTable(tc)
-    s.table(to).join(s.table(tc), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_orders"), sumx(col("o_totalprice")).as("total"))
-      .orderBy(col("c_mktsegment"))
-  }
-
-  /** Nested JSON extraction — array-of-struct access like the reference's
-    * `data["weather"][0]["description"]` (bronze flatten of a nested API
-    * payload). The nested document is assembled deterministically from
-    * columns, then parsed back with a typed schema and element access.
-    */
-  private def q51(s: SparkSession, dir: String): DataFrame = {
-    val nestedSchema = StructType(Seq(
-      StructField("metrics", StructType(Seq(
-        StructField("v", DoubleType),
-        StructField("tags", ArrayType(StructType(Seq(
-          StructField("name", StringType),
-          StructField("weight", DoubleType))))))))))
-    T(s, dir, "events")
-      // to_json assembles VALID JSON for any input (quotes/backslashes/nulls
-      // escaped) — hand-concatenation would silently null the parse on a
-      // special character
-      .withColumn("payload", to_json(struct(
-        struct(
-          col("value").as("v"),
-          array(struct(col("event_type").as("name"), col("value").as("weight")))
-            .as("tags")).as("metrics"))))
-      .select(col("event_id"),
-        Medallion.parseJson(col("payload"), nestedSchema).as("doc"))
-      .select(col("event_id"),
-        col("doc.metrics.v").as("v"),
-        element_at(col("doc.metrics.tags"), 1).getField("name").as("tag0"),
-        element_at(col("doc.metrics.tags"), 1).getField("weight").as("w0"))
-      .orderBy(col("event_id"))
-  }
-
-  /** Window ranking family: rank / dense_rank / percent_rank on the VALUE
-    * ordering (real tie semantics — a unique tie-break would collapse rank,
-    * dense_rank and row_number into the same function); ntile keeps the
-    * tie-broken total order its bucket assignment needs.
-    */
-  private def q52(s: SparkSession, dir: String): DataFrame = {
-    val wVal = Window.partitionBy(col("o_orderpriority"))
-      .orderBy(col("o_totalprice").desc)
-    val wTie = Window.partitionBy(col("o_orderpriority"))
-      .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    T(s, dir, "orders")
-      .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
-      .withColumn("rnk", rank().over(wVal))
-      .withColumn("drnk", dense_rank().over(wVal))
-      .withColumn("prnk", percent_rank().over(wVal))
-      .withColumn("quartile", ntile(4).over(wTie))
-      .filter(col("rnk") <= 20)
-      .orderBy(col("o_orderpriority"), col("rnk"), col("o_orderkey"))
-  }
-
-  /** Edit-distance fuzzy matching over the distinct vocabulary: candidate
-    * pairs bucketed by length difference <= 1, kept when levenshtein <= 2.
-    *
-    * Plan shape: the left side EXPLODES each word to its three candidate
-    * length buckets (len-1, len, len+1 — distinct values, so a qualifying
-    * pair matches exactly once) and the right side joins on its own length,
-    * making the length-tolerance condition an EQUI-join Catalyst hash/SMJ
-    * partitions by bucket. The naive `len_b BETWEEN len_a-1 AND len_a+1`
-    * theta-join has no equality conjunct and can only plan as
-    * BroadcastNestedLoopJoin — O(|vocab|²) with one side fully broadcast,
-    * which cannot survive a 100 TB corpus vocabulary. PlanAuditSpec asserts
-    * the no-BNL shape.
-    */
-  private def q49(s: SparkSession, dir: String): DataFrame = {
-    val words = T(s, dir, "documents")
-      .select(explode(split(trim(col("text")), """\s+""")).as("w"))
-      .distinct()
-    val a = words.select(col("w").as("w_a"),
-      explode(array(length(col("w")) - 1, length(col("w")), length(col("w")) + 1))
-        .as("len_bucket"))
-    val b = words.select(col("w").as("w_b"), length(col("w")).as("len_bucket"))
-    a.join(b, Seq("len_bucket"))
-      .filter(col("w_a") < col("w_b"))
-      .select(col("w_a"), col("w_b"), levenshtein(col("w_a"), col("w_b")).as("dist"))
-      .filter(col("dist") <= 2)
-      .orderBy(col("w_a"), col("w_b"))
-  }
-
-  /** Ordered funnel: users whose first signup precedes their first view,
-    * which precedes their first purchase (strict event-order analytics).
-    */
-  private def q50(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-    def firstOf(t: String) =
-      min(when(col("event_type") === t, evSec)).as(s"first_$t")
-    ev.groupBy(col("user_id"))
-      .agg(firstOf("signup"), firstOf("view"), firstOf("purchase"))
-      .filter(col("first_signup") < col("first_view") &&
-        col("first_view") < col("first_purchase"))
-      .select(col("user_id"), col("first_signup"), col("first_view"),
-        col("first_purchase"))
-      .orderBy(col("user_id"))
-  }
-
-  /** Frame sampling over binary payloads (every 4th frame, 100 B frames). */
-  private def q46(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Multimodal.sampleFrames(
-      graft.operators.Multimodal.attachPayload(T(s, dir, "documents")))
-      .orderBy(col("doc_id"), col("frame_idx"))
-
-  /** Reproducible 4/16 hash sample of the corpus. */
-  private def q47(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.deterministicSample(
-      T(s, dir, "documents"), "doc_id", 4)
-      .select(col("doc_id"), col("lang"), col("source"))
-      .orderBy(col("doc_id"))
-
-  /** Stratified sample: 20 docs per language, deterministic order. */
-  private def q48(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.stratifiedSample(
-      T(s, dir, "documents"), "lang", "doc_id", 20)
-      .select(col("doc_id"), col("lang"))
-      .orderBy(col("lang"), col("doc_id"))
-
-  /** As-of join with tolerance: like q20 but an attribution window of one
-    * hour — clicks older than that yield null (pandas merge_asof
-    * `tolerance` semantics).
-    */
-  private def q44(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id"), col("value"), evSec.as("sec"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .groupBy(col("user_id"), evSec.as("csec"))
-      .agg(max(col("event_id")).as("click_id"))
-    Relational.asofJoin(purchases, clicks, "user_id", "sec", "csec",
-      Seq("click_id", "csec"))
-      .select(col("user_id"), col("event_id"), col("value"),
-        when(col("sec") - col("csec") <= 3600, col("click_id"))
-          .as("attributed_click"))
-      .orderBy(col("user_id"), col("event_id"))
-  }
-
-  /** Time-range window frame: per-user moving sum over the trailing hour
-    * (RANGE frame on the epoch second, not a row-count frame).
-    */
-  private def q45(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("sec"))
-      .rangeBetween(-3600L, Window.currentRow)
-    T(s, dir, "events")
-      .select(col("user_id"), col("event_id"), evSec.as("sec"),
-        col("value").cast(DecimalType(18, 2)).as("__v"))
-      .withColumn("trailing_1h_sum", sum(col("__v")).over(w).cast("double"))
-      .withColumn("trailing_1h_n", count(lit(1)).over(w))
-      .select(col("user_id"), col("event_id"), col("sec"),
-        col("trailing_1h_sum"), col("trailing_1h_n"))
-      .orderBy(col("user_id"), col("event_id"))
-  }
-
-  /** CUBE aggregates over two dimensions (all grouping-set combinations). */
-  private def q41(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "orders")
-      .cube(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"), sumx(col("o_totalprice")).as("total"))
-      .select(
-        coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-        coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
-        col("n"), col("total"))
-      .orderBy(col("status"), col("priority"))
-
-  /** Row explosion (lateral view / unnest): one row per word. */
-  private def q42(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents")
-      .select(col("doc_id"),
-        explode(split(trim(col("text")), """\s+""")).as("word"))
-      .groupBy(col("word"))
-      .agg(count(lit(1)).as("n"), countDistinct(col("doc_id")).as("n_docs"))
-      .orderBy(col("word"))
-
-  /** Scalar-subquery semantics: orders above their customer's average order
-    * value (expressed as an aggregate self-join — the plan Catalyst
-    * decorrelates a correlated subquery into anyway).
-    */
-  private def q43(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders")
-    val avgPer = o.groupBy(col("o_custkey").as("k"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))).cast("double") /
-        count(lit(1))).as("avg_price"))
-    o.join(avgPer, col("o_custkey") === col("k"))
-      .filter(col("o_totalprice") > col("avg_price"))
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("avg_price"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** Composed corpus-cleaning pipeline (quality → language → dedup). */
-  private def q39(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.cleanCorpus(
-      T(s, dir, "documents"), "doc_id", "text")
-      .select(col("doc_id"), col("n_words"), col("alpha_ratio"), col("lang_pred"))
-      .orderBy(col("doc_id"))
-
-  // -------------------------------------------- §2.1b source formats
-
-  private def scratch(dir: String, q: String): String =
-    s"/root/repo/target/scratch/${q}_${math.abs(dir.hashCode)}"
-
-  /** JSON-lines ingest with an explicit schema (no runaway inference pass at
-    * 100 TB): documents round-tripped through json, then aggregated.
-    */
-  private def q34(s: SparkSession, dir: String): DataFrame = {
-    val path = scratch(dir, "q34")
-    T(s, dir, "documents")
-      .select(col("doc_id"), col("text"), col("lang"), col("source"))
-      .write.mode("overwrite").json(path)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("text", StringType),
-      StructField("lang", StringType), StructField("source", StringType)))
-    s.read.schema(schema).json(path)
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(length(col("text")).cast("long")).as("total_chars"))
-      .orderBy(col("lang"))
-  }
-
-  /** CSV ingest with an explicit schema + header. */
-  private def q35(s: SparkSession, dir: String): DataFrame = {
-    val path = scratch(dir, "q35")
-    T(s, dir, "events")
-      .select(col("event_id"), col("event_type"), col("value"))
-      .write.mode("overwrite").option("header", "true").csv(path)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    s.read.schema(schema).option("header", "true").csv(path)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("total_value"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Partition-pruned read: the reference addresses exactly one
-    * `date_id=D` partition per run; here the filter on the partition column
-    * prunes directories before any file IO.
-    */
-  private def q36(s: SparkSession, dir: String): DataFrame = {
-    val path = scratch(dir, "q36")
-    val ev = T(s, dir, "events")
-    PartitionedLake.writeAll(
-      ev.select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), evDateId.as("date_id")),
-      path, Seq("date_id"))
-    val maxDate = ev.agg(max(evDateId)).head().getString(0)
-    PartitionedLake.read(s, path)
-      .filter(col("date_id") === maxDate)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("total_value"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Range (interval) join: orders matched to OVERLAPPING price bands via
-    * the bucketed equi-join in [[Relational.rangeJoin]] — no
-    * broadcast-nested-loop, scales as fact + intervals×buckets.
-    */
-  private def q57(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val bands = Seq(
-      (1, 0, 30000), (2, 20000, 80000), (3, 75000, 200000),
-      (4, 150000, 400000), (5, 380000, 600000))
-      .toDF("band_id", "lo", "hi")
-    Relational.rangeJoin(
-      T(s, dir, "orders"), "o_totalprice", bands, "lo", "hi", 25000.0)
-      .groupBy(col("band_id"), col("lo"), col("hi"))
-      .agg(count(lit(1)).as("n_orders"), sumx(col("o_totalprice")).as("total"))
-      .orderBy(col("band_id"))
-  }
-
-  /** Set operations: INTERSECT / EXCEPT on customer key sets by order
-    * status, surfaced as one tagged union.
-    */
-  private def q58(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders")
-    def keys(status: String) =
-      o.filter(col("o_orderstatus") === status).select(col("o_custkey"))
-    val f = keys("F")
-    val open = keys("O")
-    f.intersect(open).withColumn("segment", lit("both"))
-      .unionByName(f.except(open).withColumn("segment", lit("f_only")))
-      .unionByName(open.except(f).withColumn("segment", lit("o_only")))
-      .orderBy(col("segment"), col("o_custkey"))
-  }
-
-  /** Connected components over the edit-distance pair graph (q49's edges):
-    * iterative min-label propagation ([[Dedup.dupClusters]]) — each word in
-    * a fuzzy-match cluster gets the lexicographically smallest member as its
-    * representative. The oracle replays the fixpoint as a recursive CTE.
-    */
-  private def q59(s: SparkSession, dir: String): DataFrame = {
-    val pairs = q49(s, dir)
-      .select(col("w_a").as("id_a"), col("w_b").as("id_b"))
-    val nodes = pairs.select(col("id_a").as("w"))
-      .unionAll(pairs.select(col("id_b").as("w")))
-      .distinct()
-    Dedup.dupClusters(nodes, "w", pairs, maxIter = 30)
-      .orderBy(col("w"))
-  }
-
-  /** Regex extraction suite over the corpus: first number, number count,
-    * capitalized-word count (codegen'd `RegExpExtract`/`RegExpExtractAll`,
-    * no UDF).
-    */
-  private def q60(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents").select(
-      col("doc_id"),
-      regexp_extract(col("text"), "([0-9]+)", 1).as("first_num"),
-      size(expr("regexp_extract_all(text, '[0-9]+', 0)")).cast("long").as("n_nums"),
-      size(expr("regexp_extract_all(text, '[A-Z][a-z]+', 0)")).cast("long").as("n_capitalized"))
-      .orderBy(col("doc_id"))
-
-  /** Date/time function suite over order dates (year/quarter/month/day,
-    * ISO week, weekday, last_day, datediff, add_months) — the per-column
-    * date dimension a warehouse derives at ingest.
-    */
-  private def q61(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "orders").select(
-      col("o_orderkey"),
-      year(col("o_orderdate")).cast("long").as("y"),
-      quarter(col("o_orderdate")).cast("long").as("q"),
-      month(col("o_orderdate")).cast("long").as("m"),
-      dayofmonth(col("o_orderdate")).cast("long").as("d"),
-      weekofyear(col("o_orderdate")).cast("long").as("iso_week"),
-      weekday(col("o_orderdate")).cast("long").as("wd"),
-      date_format(last_day(col("o_orderdate")), "yyyy-MM-dd").as("month_end"),
-      datediff(col("o_orderdate"), lit("1992-01-01").cast("date")).cast("long").as("days_since_92"),
-      date_format(add_months(col("o_orderdate"), 3), "yyyy-MM-dd").as("plus_quarter"))
-      .orderBy(col("o_orderkey"))
-
-  /** String function suite over customer names (substr/lpad/translate/
-    * split_part/reverse/concat_ws) — all codegen'd built-ins.
-    */
-  private def q62(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "customer").select(
-      col("c_custkey"),
-      upper(col("c_mktsegment")).as("seg_u"),
-      substring(col("c_name"), 1, 8).as("name_head"),
-      expr("split_part(c_name, '#', 2)").as("name_num"),
-      lpad(col("c_custkey").cast("string"), 10, "0").as("key_pad"),
-      translate(col("c_name"), "#0", "-_").as("name_translated"),
-      reverse(col("c_mktsegment")).as("seg_rev"),
-      concat_ws("|", col("c_mktsegment"), col("c_name")).as("tagged"),
-      length(col("c_name")).cast("long").as("name_len"))
-      .orderBy(col("c_custkey"))
-
-  /** max_by / min_by with deterministic struct tie-breaks: per user, the
-    * event type of the highest/lowest-value event. DuckDB's arg_max can't
-    * take a composite ordering, so the oracle replays the semantics with
-    * window functions.
-    */
-  private def q63(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
-      .groupBy(col("user_id"))
-      .agg(
-        count(lit(1)).as("n"),
-        max_by(col("event_type"), struct(col("value"), col("event_id"))).as("top_type"),
-        min_by(col("event_type"), struct(col("value"), col("event_id"))).as("bottom_type"),
-        max(col("value")).as("max_value"))
-      .orderBy(col("user_id"))
-
-  /** Gaps-and-islands → SCD type-2 history: per user, runs of consecutive
-    * equal event_type collapse into versioned validity rows with an
-    * is_current flag (the ETL pattern for building slowly-changing
-    * dimensions from an event stream).
-    */
-  private def q64(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("sec"), col("event_id"))
-    val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    T(s, dir, "events")
-      .select(col("user_id"), col("event_id"), col("event_type"), evSec.as("sec"))
-      .withColumn("chg",
-        when(lag(col("event_type"), 1).over(w).isNull ||
-          lag(col("event_type"), 1).over(w) =!= col("event_type"), 1).otherwise(0))
-      .withColumn("version", sum(col("chg")).over(cum))
-      .groupBy(col("user_id"), col("version"))
-      .agg(min(col("event_type")).as("event_type"),
-        min(col("sec")).as("valid_from"), max(col("sec")).as("valid_to"),
-        count(lit(1)).as("n_events"))
-      .withColumn("is_current",
-        (col("version") === max(col("version")).over(Window.partitionBy(col("user_id"))))
-          .cast("int"))
-      .orderBy(col("user_id"), col("version"))
-  }
-
-  /** Time-series resample + forward fill: per-user hourly spine between the
-    * user's first and last active hour (`sequence` + explode — the
-    * distributed date-spine pattern), hourly sums joined on, gaps
-    * forward-filled with a `last(ignoreNulls)` window.
-    */
-  private def q65(s: SparkSession, dir: String): DataFrame = {
-    // interval-explode formulation: each observed hour carries the fill
-    // until the next observation, so the spine rows are generated WITH
-    // their forward-fill attached — no bounds aggregate, no spine⋈census
-    // join, and the one window (lead) reuses the census groupBy's
-    // partitioning. Same rows: within an interval the last observed value
-    // IS the interval head's value (value is non-null by table contract).
-    val hourly = T(s, dir, "events")
-      .groupBy(col("user_id"), (expr("(ts div 1000000000) div 3600") * 3600).as("hsec"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("hv"))
-    val wLead = Window.partitionBy(col("user_id")).orderBy(col("hsec"))
-    hourly
-      .withColumn("__next", lead(col("hsec"), 1).over(wLead))
-      .select(col("user_id"), col("n"), col("hv"), col("hsec").as("__h"),
-        explode(sequence(col("hsec"),
-          coalesce(col("__next") - 3600L, col("hsec")), lit(3600L))).as("hsec"))
-      .select(col("user_id"), col("hsec"),
-        when(col("hsec") === col("__h"), col("n")).otherwise(lit(0L)).as("n"),
-        col("hv").as("total_ffill"))
-      .orderBy(col("user_id"), col("hsec"))
-  }
-
-  /** UNPIVOT (melt): the wide per-user counts of q16 stacked back to long
-    * form — zero counts included, which distinguishes this from a plain
-    * groupBy over the source.
-    */
-  private def q66(s: SparkSession, dir: String): DataFrame = {
-    val types = Seq("click", "view", "purchase", "signup", "error")
-    val aggs = types.map(t =>
-      sum(when(col("event_type") === t, 1).otherwise(0)).cast("long").as(s"n_$t"))
-    val stackArgs = types.map(t => s"'$t', n_$t").mkString(", ")
-    T(s, dir, "events")
-      .groupBy(col("user_id"))
-      .agg(aggs.head, aggs.tail: _*)
-      .select(col("user_id"),
-        expr(s"stack(${types.size}, $stackArgs) AS (event_type, n)"))
-      .orderBy(col("user_id"), col("event_type"))
-  }
-
-  /** Histogram binning: fixed-width bins over order totals with per-bin
-    * bounds and global share (window over an aggregate).
-    */
-  private def q67(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "orders")
-      .withColumn("bin", floor(col("o_totalprice") / 30000.0).cast("long"))
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("n"),
-        min(col("o_totalprice")).as("lo_seen"), max(col("o_totalprice")).as("hi_seen"))
-      .withColumn("frac",
-        col("n").cast("double") / sum(col("n")).over(Window.partitionBy()).cast("double"))
-      .orderBy(col("bin"))
-
-  /** CDC compaction: latest state per (user_id, event_type) key by
-    * (sec, event_id) — the keep-last-version dedup every change-data-capture
-    * ingest needs before serving.
-    */
-  private def q68(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"), col("event_type"))
-      .orderBy(col("sec").desc, col("event_id").desc)
-    T(s, dir, "events")
-      .select(col("user_id"), col("event_type"), col("event_id"), col("value"), evSec.as("sec"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("user_id"), col("event_type"), col("event_id").as("last_event"),
-        col("value").as("last_value"), col("sec").as("last_sec"))
-      .orderBy(col("user_id"), col("event_type"))
-  }
-
-  /** Ordered array aggregation: per user, the event sequence collected as a
-    * sorted struct array (collect_list alone is order-nondeterministic),
-    * then sliced/joined into a journey prefix string.
-    */
-  private def q70(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
-      .select(col("user_id"),
-        struct(evSec.as("sec"), col("event_id"), col("event_type")).as("e"))
-      .groupBy(col("user_id"))
-      .agg(sort_array(collect_list(col("e"))).as("es"))
-      .select(col("user_id"),
-        size(col("es")).cast("long").as("n_events"),
-        array_join(
-          slice(transform(col("es"), x => x.getField("event_type")), 1, 5), ">")
-          .as("first5"))
-      .orderBy(col("user_id"))
-
-  /** Path (sequence) mining: top 20 three-step event-type paths via lead
-    * windows — no self-joins, one shuffle on the user key.
-    */
-  private def q71(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("sec"), col("event_id"))
-    T(s, dir, "events")
-      .select(col("user_id"), col("event_type"), evSec.as("sec"), col("event_id"))
-      .withColumn("t2", lead(col("event_type"), 1).over(w))
-      .withColumn("t3", lead(col("event_type"), 2).over(w))
-      .filter(col("t2").isNotNull && col("t3").isNotNull)
-      .select(concat_ws(">", col("event_type"), col("t2"), col("t3")).as("path"))
-      .groupBy(col("path"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("path"))
-      .limit(20)
-  }
-
-  /** Cohort retention: users grouped by first-signup day, distinct actives
-    * per whole-week offset since signup.
-    */
-  private def q72(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-    val firstSignup = ev.filter(col("event_type") === "signup")
-      .groupBy(col("user_id")).agg(min(evSec).as("s0"))
-    ev.select(col("user_id"), evSec.as("sec"))
-      .join(firstSignup, Seq("user_id"))
-      .filter(col("sec") >= col("s0"))
-      .select(
-        date_format(timestamp_seconds(col("s0")).cast("timestamp_ntz"), "yyyy-MM-dd")
-          .as("cohort_day"),
-        expr("(sec - s0) div 604800").as("week_offset"),
-        col("user_id"))
-      .groupBy(col("cohort_day"), col("week_offset"))
-      .agg(countDistinct(col("user_id")).as("n_users"))
-      .orderBy(col("cohort_day"), col("week_offset"))
-  }
-
-  /** ORC source/sink round-trip with explicit schema (the engine's second
-    * columnar format beside parquet), aggregated after read-back.
-    */
-  private def q73(s: SparkSession, dir: String): DataFrame = {
-    val path = scratch(dir, "q73")
-    T(s, dir, "events")
-      .select(col("event_id"), col("event_type"), col("value"))
-      .write.mode("overwrite").orc(path)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    s.read.schema(schema).orc(path)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("total_value"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Dynamic partition pruning: the partitioned events lake joined to a
-    * tiny date dimension — the lake's partition filter is injected at
-    * RUNTIME from the dim side (`dynamicpruning` subquery in the plan), so
-    * only the dim's days are scanned. This is how a 100 TB fact table
-    * avoids a full scan when the filter lives on the dimension.
-    */
-  private def q74(s: SparkSession, dir: String): DataFrame = {
-    val path = scratch(dir, "q36") // reuse q36's date_id-partitioned lake
-    val ev = T(s, dir, "events")
-    PartitionedLake.writeAll(
-      ev.select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"), evDateId.as("date_id")),
-      path, Seq("date_id"))
-    // the recency cut is an explicit PREDICATE (day_rank <= 3), not a
-    // LIMIT: dynamic partition pruning only fires when the build side
-    // carries a selective filter predicate
-    val lastDays = ev.select(evDateId.as("date_id")).distinct()
-      .withColumn("day_rank", row_number().over(Window.orderBy(col("date_id").desc)))
-      .filter(col("day_rank") <= 3)
-    PartitionedLake.read(s, path)
-      .join(broadcast(lastDays), Seq("date_id"))
-      .groupBy(col("date_id").cast("string").as("date_id"), col("day_rank"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("total_value"))
-      .orderBy(col("date_id"))
-  }
-
-  /** Salted join: orders (big, skewed side) joined to customer (replicated
-    * small side) on (key, salt) — row-identical to the plain join, hot keys
-    * spread over 16 reducers. Aggregated for a compact verifiable result.
-    */
-  private def q75(s: SparkSession, dir: String): DataFrame =
-    Relational.saltedJoin(
-      T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-      T(s, dir, "customer").select(col("c_custkey").as("o_custkey"), col("c_mktsegment")),
-      "o_custkey")
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_orders"), sumx(col("o_totalprice")).as("total"))
-      .orderBy(col("c_mktsegment"))
-
-  /** Quality-weighted corpus sampling: documents survive with probability
-    * equal to their quality score (deterministic md5 fraction vs weight).
-    */
-  private def q76(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.weightedSample(
-      T(s, dir, "documents")
-        .withColumn("quality", TF.qualityScore(col("text"))),
-      "doc_id", "quality")
-      .select(col("doc_id"), col("lang"), round(col("quality"), 6).as("quality_r"))
-      .orderBy(col("doc_id"))
-
-  /** MERGE INTO (upsert) over the partitioned lake: daily aggregates seeded,
-    * then the latest day's click/view rows updated (+1000 events) and one
-    * new key inserted — read back in full. Exercises
-    * [[PartitionedLake.mergeUpsert]]'s affected-partition-only rewrite.
-    */
-  private def q78(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q78")
-    val daily = T(s, dir, "events")
-      .groupBy(evDateId.as("date_id"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sumx(col("value")).as("total_value"))
-    PartitionedLake.writeAll(daily, lake, Seq("date_id"))
-    val maxDate = daily.agg(max(col("date_id"))).head().getString(0)
-    val updates = daily
-      .filter(col("date_id") === maxDate && col("event_type").isin("click", "view"))
-      .withColumn("n_events", col("n_events") + 1000)
-      .unionByName(
-        s.createDataFrame(
-          java.util.Arrays.asList(org.apache.spark.sql.Row("synthetic", 1L, 0.0, maxDate)),
-          StructType(Seq(
-            StructField("event_type", StringType), StructField("n_events", LongType),
-            StructField("total_value", DoubleType), StructField("date_id", StringType)))))
-    PartitionedLake.mergeUpsert(s, lake, updates,
-      keyCols = Seq("date_id", "event_type"), partCols = Seq("date_id"))
-    PartitionedLake.read(s, lake)
-      .select(col("date_id").cast("string").as("date_id"), col("event_type"),
-        col("n_events"), col("total_value"))
-      .orderBy(col("date_id"), col("event_type"))
-  }
-
-  /** Typed Dataset API: case-class encoders, `joinWith` (typed tuple join),
-    * typed filter/map — the compile-time-checked face of the engine. Same
-    * relational plan under Catalyst as the DataFrame form, so zero
-    * performance cost (asserted by the oracle equality itself).
-    */
-  private def q79(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val orders = T(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-        col("o_orderstatus"))
-      .as[OrderRow]
-    val customers = T(s, dir, "customer")
-      .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-      .as[CustomerRow]
-    orders.filter(_.o_orderstatus == "F")
-      .joinWith(customers, orders("o_custkey") === customers("c_custkey"))
-      .map { case (o, c) =>
-        EnrichedOrder(o.o_orderkey, c.c_name, c.c_mktsegment, o.o_totalprice)
-      }
-      .toDF()
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** Bloom-filter pre-join pruning: a compact filter built from the small
-    * side's keys drops most non-matching big-side rows BEFORE the join
-    * shuffle (false positives are removed by the real join, so the result
-    * is exact). At 100 TB this is the standard trick to avoid shuffling a
-    * fact table against a selective dimension.
-    */
-  private def q80(s: SparkSession, dir: String): DataFrame = {
-    val dim = T(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-    // size from the actual key count: a hardcoded capacity saturates at
-    // larger SFs and the false-positive rate quietly climbs, turning the
-    // pre-filter into a no-op
-    val bloom = dim.stat.bloomFilter("c_custkey", math.max(dim.count(), 64L), 0.01)
-    val bloomBc = s.sparkContext.broadcast(bloom)
-    T(s, dir, "orders")
-      // cheap pre-shuffle prune, codegen'd (no UDF boxing on the hot path)
-      .filter(graft.plans.BloomExpressions.mightContainLong(col("o_custkey"), bloomBc))
-      .join(dim, col("o_custkey") === col("c_custkey")) // exact join
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_orders"), sumx(col("o_totalprice")).as("total"))
-      .orderBy(col("c_mktsegment"))
-  }
-
-  /** Z-order layout: orders clustered by the Morton interleave of
-    * (custkey, order-day), written and read back with the z-value — the
-    * two-dimensional file-skipping layout. Oracle replays the interleave
-    * bit-for-bit.
-    */
-  private def q81(s: SparkSession, dir: String): DataFrame = {
-    val path = scratch(dir, "q81")
-    val withDims = T(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"),
-        datediff(col("o_orderdate"), lit("1992-01-01").cast("date")).cast("long")
-          .as("day_nr"))
-    graft.operators.Layout.zorderWrite(withDims, path, "o_custkey", "day_nr")
-    PartitionedLake.read(s, path)
-      .select(col("o_orderkey"), col("o_custkey"), col("day_nr"),
-        graft.operators.Layout.zorderValue(col("o_custkey"), col("day_nr")).as("zval"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** Three-key Z-order layout: orders clustered by the Morton interleave
-    * of (custkey, order-day, price-in-thousands), written and read back
-    * with the z-value. Three selective dimensions on one fact table is the
-    * common lakehouse shape (who / when / how-much); the interleave keeps
-    * per-file min/max tight on ALL three so a range predicate on any one
-    * skips most files (LayoutSpec proves the skip ratio). Oracle replays
-    * the interleave bit-for-bit.
-    */
-  private def q94(s: SparkSession, dir: String): DataFrame = {
-    val keys = Seq("o_custkey", "day_nr", "price_k")
-    val path = scratch(dir, "q94")
-    val withDims = T(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"),
-        datediff(col("o_orderdate"), lit("1992-01-01").cast("date")).cast("long")
-          .as("day_nr"),
-        floor(col("o_totalprice") / 1000.0).as("price_k"))
-    graft.operators.Layout.zorderWriteN(withDims, path, keys)
-    PartitionedLake.read(s, path)
-      .select(col("o_orderkey"), col("o_custkey"), col("day_nr"), col("price_k"),
-        graft.operators.Layout.zorderValueN(16, keys.map(col)).as("zval"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** Interpolated (continuous) percentiles per group, computed with an
-    * EXPLICIT rank-interpolation formula — `pos = 1 + p(n-1)`, linear blend
-    * of the two straddling order statistics — identically on both engines,
-    * because built-in `percentile`/`quantile_cont` implementations need not
-    * agree in floating point.
-    */
-  private def q82(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("o_orderpriority")).orderBy(col("o_totalprice"), col("o_orderkey"))
-    val cw = Window.partitionBy(col("o_orderpriority"))
-    val ranked = T(s, dir, "orders")
-      .select(col("o_orderpriority"), col("o_totalprice"), col("o_orderkey"))
-      .withColumn("rn", row_number().over(w))
-      .withColumn("n", count(lit(1)).over(cw))
-    def interp(p: Double): Column = {
-      val pos = lit(1.0) + lit(p) * (col("n").cast("double") - 1.0)
-      val lo = floor(pos).cast("long")
-      val hi = ceil(pos).cast("long")
-      val vLo = max(when(col("rn") === lo, col("o_totalprice")))
-      val vHi = max(when(col("rn") === hi, col("o_totalprice")))
-      // every input reference stays inside an aggregate (pos/lo derive from
-      // n, which is not a grouping column); frac is constant per group
-      vLo + max(pos - floor(pos)) * (vHi - vLo)
-    }
-    ranked.groupBy(col("o_orderpriority"))
-      .agg(interp(0.25).as("p25"), interp(0.5).as("p50"), interp(0.95).as("p95"),
-        max(col("n")).as("n"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  /** Correlation / stddev the scale-correct way: raw moments (n, Σx, Σy,
-    * Σx², Σy², Σxy) accumulate in DECIMAL — order-independent, map-side
-    * combinable — and the statistics derive in double arithmetic identical
-    * on both engines. A plain `corr()`/`stddev()` over doubles is
-    * partition-order-dependent and never hash-reproducible.
-    */
-  private def q83(s: SparkSession, dir: String): DataFrame = {
-    // base values cast to DECIMAL(18,2) (parity-safe: granularity far above
-    // the doubles' ulp), then multiplied IN decimal — casting a ~1e11
-    // double product to a fine-scaled decimal is NOT cross-engine-stable
-    // (the rounding position falls below the double's ulp)
-    def d(c: Column) = c.cast(DecimalType(18, 2))
-    def m(c: Column) = sum(c).cast("double")
-    val x = col("o_totalprice")
-    val y = col("days")
-    T(s, dir, "orders")
-      .select(col("o_orderpriority"), col("o_totalprice"),
-        datediff(col("o_orderdate"), lit("1992-01-01").cast("date")).cast("double").as("days"))
-      .groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).cast("double").as("n"),
-        m(d(x)).as("sx"), m(d(y)).as("sy"), m(d(x) * d(x)).as("sxx"),
-        m(d(y) * d(y)).as("syy"), m(d(x) * d(y)).as("sxy"))
-      .select(col("o_orderpriority"), col("n").cast("long").as("n"),
-        // outputs rounded to 9 decimals: the decimal SUMS are exact and
-        // identical cross-engine, but wide-decimal→double casts are not
-        // correctly-rounded identically everywhere (observed 1 ulp), and
-        // rounding the derived statistic absorbs that
-        round((col("sxy") - col("sx") * col("sy") / col("n")) /
-          (sqrt(col("sxx") - col("sx") * col("sx") / col("n")) *
-            sqrt(col("syy") - col("sy") * col("sy") / col("n"))), 9).as("corr_xy"),
-        round(sqrt((col("sxx") - col("sx") * col("sx") / col("n")) / (col("n") - 1.0)), 9)
-          .as("stddev_x"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  /** MinHash candidate pairs with ESTIMATED Jaccard (signature agreement
-    * ratio) — the operator the LSH theory is about, replayed exactly by the
-    * oracle thanks to the portable hash family.
-    */
-  private def q84(s: SparkSession, dir: String): DataFrame =
-    Dedup.minhashNearDupPairs(T(s, dir, "documents"), "doc_id", "text", threshold = 0.3)
-      .orderBy(col("id_a"), col("id_b"))
-
-  /** TF-IDF: term frequency × inverse document frequency over the corpus,
-    * top 100 (doc, term) scores. ln() at the very end over exact integer
-    * ratios; rounded to 6 decimals for cross-engine float safety.
-    */
-  private def q85(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
-    val nDocs = docs.count()
-    val words = docs.select(col("doc_id"), explode(TF.words(col("text"))).as("w"))
-    val tf = words.groupBy(col("doc_id"), col("w")).agg(count(lit(1)).as("tf"))
-    val df_ = words.select(col("doc_id"), col("w")).distinct()
-      .groupBy(col("w")).agg(count(lit(1)).as("df"))
-    tf.join(df_, Seq("w"))
-      .select(col("doc_id"), col("w"),
-        round(col("tf").cast("double") * log(lit(nDocs.toDouble) / col("df").cast("double")), 6)
-          .as("tfidf"))
-      .orderBy(col("tfidf").desc, col("doc_id"), col("w"))
-      .limit(100)
-  }
-
-  /** RAG-style sliding-window chunking: 400-char windows, 160-char hop,
-    * per-chunk md5 (the downstream dedup/embedding key). Character-window
-    * semantics are engine-identical; the explode scales chunk rows out.
-    */
-  private def q86(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.slidingChunks(
-      T(s, dir, "documents").select(col("doc_id"), col("text")), "text")
-      .select(col("doc_id"), col("chunk_idx"), col("chunk_off"),
-        length(col("chunk")).cast("long").as("chunk_len"),
-        md5(col("chunk").cast("binary")).as("chunk_md5"))
-      .orderBy(col("doc_id"), col("chunk_idx"))
-
-  /** Schema-drift union: a v2 frame with an added column and a dropped
-    * column merges with v1 via unionByName(allowMissingColumns) — the ETL
-    * answer to evolving upstream schemas without a rewrite.
-    */
-  private def q87(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders")
-    val v1 = o.filter(col("o_orderkey") % 2 === 0)
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    val v2 = o.filter(col("o_orderkey") % 2 === 1)
-      .select(col("o_orderkey"), col("o_totalprice"),
-        col("o_orderpriority")) // drifted: +priority, -custkey
-    v1.unionByName(v2, allowMissingColumns = true)
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** MapType handling: per-user event-type counts assembled into a map
-    * column (sorted entries → deterministic), then exploded back to rows —
-    * the round-trip every semi-structured pipeline needs.
-    */
-  private def q88(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
-      .groupBy(col("user_id"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .groupBy(col("user_id"))
-      .agg(map_from_entries(
-        array_sort(collect_list(struct(col("event_type"), col("n"))))).as("m"))
-      .select(col("user_id"), size(col("m")).cast("long").as("n_types"),
-        explode(col("m")).as(Seq("event_type", "n")))
-      .orderBy(col("user_id"), col("event_type"))
-
-  /** Three-valued-logic suite: null-safe equality (<=>), NULLIF, coalesce
-    * chains and null-aware counts over a column with injected nulls.
-    */
-  private def q89(s: SparkSession, dir: String): DataFrame = {
-    val nullable = T(s, dir, "events")
-      .select(col("event_id"), col("user_id"),
-        nullif(col("event_type"), lit("error")).as("et"),
-        when(col("value") > 50, col("value")).as("big_value"))
-    nullable
-      .groupBy(col("user_id"))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        count(col("et")).as("n_et"),           // nulls excluded
-        count(col("big_value")).as("n_big"),
-        sum(when(col("et") <=> lit(null), 1).otherwise(0)).cast("long").as("n_null_safe_eq"),
-        sumx(coalesce(col("big_value"), lit(0.0))).as("big_total"))
-      .orderBy(col("user_id"))
-  }
-
-  /** Corrupt-record-tolerant ingestion: JSON lines where odd doc_ids are
-    * deterministically truncated mid-object; PERMISSIVE parsing routes bad
-    * rows to `_corrupt_record` instead of failing the job — the bronze
-    * posture for messy upstream feeds.
-    */
-  private def q90(s: SparkSession, dir: String): DataFrame = {
-    val path = scratch(dir, "q90")
-    T(s, dir, "documents").select(
-      when(col("doc_id") % 2 === 0,
-        to_json(struct(col("doc_id"), col("lang"), col("n_chars"))))
-        .otherwise(concat(lit("{\"doc_id\": "), col("doc_id").cast("string"),
-          lit(", \"lang\": \"")))
-        .as("line"))
-      .write.mode("overwrite").text(path)
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType), StructField("lang", StringType),
-      StructField("n_chars", LongType), StructField("_corrupt_record", StringType)))
-    s.read.schema(schema)
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
-      // materialize the parsed frame: Spark refuses plans whose pruned scan
-      // references ONLY the corrupt-record column (e.g. a downstream count
-      // that prunes everything but `status`)
-      .localCheckpoint(true)
-      .select(when(col("_corrupt_record").isNull, "valid").otherwise("corrupt").as("status"),
-        col("lang"), col("n_chars"))
-      .groupBy(col("status"))
-      .agg(count(lit(1)).as("n"), countDistinct(col("lang")).as("n_langs"),
-        sum(col("n_chars")).as("total_chars"))
-      .orderBy(col("status"))
-  }
-
-  /** End-to-end training-data preparation, composed from the library's own
-    * operators in ONE declarative plan: quality+language gates and
-    * fingerprint dedup (TextPipeline.cleanCorpus) → RAG chunking →
-    * corpus-wide chunk dedup on md5 (keep first) → per-document keep
-    * stats. The shape a 100 TB pre-training pipeline actually runs.
-    */
-  private def q91(s: SparkSession, dir: String): DataFrame = {
-    val clean = graft.operators.TextPipeline.cleanCorpus(
-      T(s, dir, "documents"), "doc_id", "text")
-      .select(col("doc_id"), col("text"), col("lang_pred"))
-    val chunks = graft.operators.TextPipeline.slidingChunks(clean, "text")
-      .withColumn("chunk_md5", md5(col("chunk").cast("binary")))
-    val w = Window.partitionBy(col("chunk_md5")).orderBy(col("doc_id"), col("chunk_idx"))
-    chunks
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .groupBy(col("doc_id"), col("lang_pred"))
-      .agg(count(lit(1)).as("n_chunks_kept"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** API-ingest bronze, end-to-end: request table (one URL per nation) →
-    * distributed rate-limited fetch (deterministic stub fetcher — this
-    * sandbox has no egress; see ApiIngest.DeterministicStub) → explicit-
-    * schema JSON flatten → delete-insert lake load by date_id → read-back.
-    * Mirrors the reference's weather-API bronze
-    * (analytics__world_weather.py:40–95, 135–180). Keys ≡ 7 (mod 13)
-    * 404 and are quarantined, so the oracle excludes them.
-    */
-  private def q93(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val reqs = T(s, dir, "nation").select(
-      col("n_nationkey").cast("long").as("request_id"),
-      concat(lit("https://api.example.test/weather?key="), col("n_nationkey"),
-        lit("&q="), col("n_name")).as("url"))
-      .as[graft.sources.FetchRequest]
-    val fetched = graft.sources.ApiIngest.fetchAll(
-      reqs, graft.sources.ApiIngest.DeterministicStub,
-      maxPartitions = 4, perPartitionRequestsPerSec = 10000.0)
-    val payloadSchema = StructType(Seq(
-      StructField("name", StringType),
-      StructField("sys", StructType(Seq(StructField("country", StringType)))),
-      StructField("main", StructType(Seq(
-        StructField("temp", DoubleType), StructField("humidity", LongType)))),
-      StructField("wind", StructType(Seq(StructField("speed", DoubleType))))))
-    val flat = graft.sources.ApiIngest.flattenPayloads(fetched.toDF(), payloadSchema)
-      .select(
-        col("name").as("city"),
-        col("sys.country").as("country"),
-        col("main.temp").as("temp"),
-        col("main.humidity").as("humidity"),
-        col("wind.speed").as("wind_speed"),
-        lit("2024-01-15").as("date_id"))
-    val path = scratch(dir, "q93")
-    PartitionedLake.deleteInsert(flat, path, Seq("date_id"))
-    PartitionedLake.read(s, path)
-      .select(col("city"), col("country"), col("temp"), col("humidity"),
-        col("wind_speed"), col("date_id").cast("string").as("date_id"))
-      .orderBy(col("city"))
-  }
-
-  /** Count-Min sketch heavy hitters over the corpus vocabulary: top-20
-    * words with true count and (never-undercounting) CMS estimate. The
-    * oracle replays every xorshift bucket assignment bit-for-bit.
-    */
-  private def q95(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sketches.cmsHeavyHitters(T(s, dir, "documents"), "text")
-
-  /** BM25 retrieval scoring of the corpus against a fixed term set —
-    * decimal-accumulated per-document sums keep the ranking
-    * order-independent and engine-identical.
-    */
-  private def q96(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sketches.bm25(
-      T(s, dir, "documents"), "doc_id", "text", Seq("spark", "join", "scan"))
-
-  /** Incremental materialized-aggregate maintenance: the daily rollup lake
-    * is seeded from the non-error event history, then the latest day's
-    * error slice arrives as partial aggregates and
-    * [[graft.operators.Incremental.mergeAdditive]] re-aggregates ONLY that
-    * day's partition (state + partials), committing it with dynamic
-    * overwrite — maintenance cost tracks the delta, not the table.
-    */
-  private def q97(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q97")
-    val ev = T(s, dir, "events")
-    def daily(src: DataFrame) = src
-      .groupBy(evDateId.as("date_id"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sumx(col("value")).as("total_value"))
-    val state = daily(ev.filter(col("event_type") =!= "error"))
-    PartitionedLake.writeAll(state, lake, Seq("date_id"))
-    val maxDate = state.agg(max(col("date_id"))).head().getString(0)
-    val delta = daily(ev.filter(col("event_type") === "error"))
-      .filter(col("date_id") === maxDate)
-    graft.operators.Incremental.mergeAdditive(s, lake, delta,
-      keyCols = Seq("event_type"), partCol = "date_id",
-      measureCols = Seq("n_events", "total_value"))
-    PartitionedLake.read(s, lake)
-      .select(col("date_id").cast("string").as("date_id"), col("event_type"),
-        col("n_events"), col("total_value"))
-      .orderBy(col("date_id"), col("event_type"))
-  }
-
-  /** Versioned (time-travel) lake: three change sets land as `version=v`
-    * partitions, then the as-of-v2 read reconstructs that snapshot —
-    * latest change per key wins, deletes drop their key, and the v3
-    * change set is partition-pruned away entirely (history stays
-    * immutable and every old snapshot remains readable).
-    */
-  /** Stage the shared 3-version customer change history (q98 + q103):
-    * v1 = base snapshot of keys <= 500; v2 = +100 balance upserts for
-    * keys ≡ 0 (mod 10) and deletes for the remaining keys ≡ 0 (mod 7);
-    * v3 = every base key re-upserted with a zeroed balance.
-    */
-  private def customerVersionedLake(s: SparkSession, dir: String, q: String): String = {
-    val lake = scratch(dir, q)
-    val base = T(s, dir, "customer")
-      .filter(col("c_custkey") <= 500)
-      .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-    val v2 = base.filter(col("c_custkey") % 10 === 0)
-      .withColumn("c_acctbal", col("c_acctbal") + lit(100.0))
-      .withColumn("op", lit("U"))
-      .unionByName(
-        base.filter(col("c_custkey") % 10 =!= 0 && col("c_custkey") % 7 === 0)
-          .withColumn("op", lit("D")))
-    VersionedLake.writeVersion(base.withColumn("op", lit("U")), lake, 1L)
-    VersionedLake.writeVersion(v2, lake, 2L)
-    VersionedLake.writeVersion(
-      base.withColumn("c_acctbal", lit(0.0)).withColumn("op", lit("U")), lake, 3L)
-    lake
-  }
-
-  private def q98(s: SparkSession, dir: String): DataFrame = {
-    // the as-of-v2 read must not see v3's zeroed balances
-    val lake = customerVersionedLake(s, dir, "q98")
-    VersionedLake.readAsOf(s, lake, 2L, Seq("c_custkey"))
-      .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
-        col("version").cast("long").as("version"))
-      .orderBy(col("c_custkey"))
-  }
-
-  /** Trailing-24h distinct users per observed hour. The scalable shape —
-    * dedup to (hour, user) pairs, bounded 24× explode, plain groupBy —
-    * instead of the per-hour trailing-interval theta-join (which can only
-    * plan as BNL). See [[Relational.trailingDistinct]].
-    */
-  private def q99(s: SparkSession, dir: String): DataFrame =
-    Relational.trailingDistinct(
-      T(s, dir, "events")
-        .select(expr("ts div 1000000000 div 3600").as("hour_id"), col("user_id")),
-      "hour_id", "user_id", windowBuckets = 24)
-      .orderBy(col("hour_id"))
-
-  /** PageRank over the customer–supplier bipartite graph mined from
-    * orders×lineitem (both edge directions, so no dangling nodes);
-    * suppliers are negated to share customers' id space. Three iterations,
-    * each one equi-join + one decimal-deterministic aggregation — the
-    * iterative-analytics shape that holds at 100 TB. Top 100 nodes.
-    */
-  private def q100(s: SparkSession, dir: String): DataFrame = {
-    val pairs = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      .join(T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .distinct()
-    val edges = pairs.select(col("cust").as("src"), (-col("supp")).as("dst"))
-      .unionByName(pairs.select((-col("supp")).as("src"), col("cust").as("dst")))
-    graft.operators.Graph.pageRank(edges, iters = 3)
-      .orderBy(col("pr").desc, col("node"))
-      .limit(100)
-  }
-
-  /** One-pass table profiling: per column non-null / exact-distinct counts
-    * and numeric min/max ([[graft.operators.Profiling.profile]]) — the
-    * trust-a-new-drop summary, single scan regardless of column count.
-    */
-  private def q101(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Profiling.profile(T(s, dir, "customer"))
-      .orderBy(col("col_name"))
-
-  /** Arbitrary GROUPING SETS with a grouping_id discriminator — the
-    * generalization of q17's rollup / q41's cube to caller-chosen
-    * combinations, one Expand pass.
-    */
-  private def q102(s: SparkSession, dir: String): DataFrame = {
-    val li = T(s, dir, "lineitem")
-    li.groupingSets(
-      Seq(Seq(col("l_returnflag"), col("l_linestatus")),
-        Seq(col("l_returnflag")), Seq(col("l_linestatus")), Seq.empty),
-      col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("n"), sumx(col("l_quantity")).as("sum_qty"),
-        (grouping(col("l_returnflag")) * 2 + grouping(col("l_linestatus")))
-          .cast("long").as("gid"))
-      .select(
-        coalesce(col("l_returnflag"), lit("ALL")).as("return_flag"),
-        coalesce(col("l_linestatus"), lit("ALL")).as("line_status"),
-        col("gid"), col("n"), col("sum_qty"))
-      .orderBy(col("gid"), col("return_flag"), col("line_status"))
-  }
-
-  /** Change-data feed between two lake snapshots: the keys inserted /
-    * deleted / updated going v2 → v3 of the shared version history,
-    * derived retroactively by [[VersionedLake.snapshotDiff]] (unchanged
-    * keys dropped by a null-safe payload compare).
-    */
-  private def q103(s: SparkSession, dir: String): DataFrame = {
-    val lake = customerVersionedLake(s, dir, "q103")
-    VersionedLake.snapshotDiff(s, lake, 2L, 3L, Seq("c_custkey"))
-      .select(col("c_custkey"), col("change"),
-        col("old.c_acctbal").as("old_acctbal"),
-        col("new.c_acctbal").as("new_acctbal"))
-      .orderBy(col("c_custkey"))
-  }
-
-  /** Int8-quantized ANN: corpus-global scalar quantization onto the 0..255
-    * grid, then exact top-k over the QUANTIZED vectors — the 4× memory
-    * compression every billion-vector index uses, with integer-exact
-    * cosine accumulations so ranks replay deterministically cross-engine.
-    */
-  private def q104(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    Similarity.quantizedKnn(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", 10)
-  }
-
-  /** Rule-driven data-quality suite over orders: four violation predicates
-    * evaluated in one aggregation pass ([[graft.operators.Quality]]).
-    */
-  private def q105(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Quality.checkRules(T(s, dir, "orders"), Seq(
-      "price_positive" -> (col("o_totalprice") <= 0.0),
-      "status_domain" -> !col("o_orderstatus").isin("O", "F", "P"),
-      "date_present" -> col("o_orderdate").isNull,
-      "priority_format" -> !col("o_orderpriority").rlike("^[1-5]-")))
-      .orderBy(col("rule_id"))
-
-  /** Change-chain checkpoint: compact the 3-version history into a fresh
-    * base at v4, then read as-of v4 with the compaction floor — one change
-    * set scanned regardless of history length ([[VersionedLake.compact]]).
-    */
-  private def q106(s: SparkSession, dir: String): DataFrame = {
-    val lake = customerVersionedLake(s, dir, "q106")
-    VersionedLake.compact(s, lake, version = 3L, keyCols = Seq("c_custkey"),
-      newVersion = 4L)
-    VersionedLake.readAsOf(s, lake, 4L, Seq("c_custkey"), floorVersion = 4L)
-      .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
-        col("version").cast("long").as("version"))
-      .orderBy(col("c_custkey"))
-  }
-
-  /** The flatMapGroupsWithState sessionizer inside the oracle gate:
-    * sentinel-staged input advances the watermark past every real
-    * session's timeout, so the drained append output hash-matches the
-    * batch gap-split sessionization.
-    */
-  private def q107(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.customStateSessions(s, q92Events(s, dir))
-      .select(col("user_id"), col("start_sec"), col("end_sec"),
-        col("n_events").cast("long").as("n_events"))
-      .orderBy(col("user_id"), col("start_sec"))
-
-  /** Custom typed Aggregator through the udaf surface: exact-decimal
-    * weighted mean (price weighted by quantity) per return flag — the
-    * extension point for aggregates the built-ins can't express, with the
-    * same partition-order determinism discipline as `sumx`.
-    */
-  private def q108(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .agg(
-        graft.functions.Aggregators
-          .weightedMean(col("l_extendedprice"), col("l_quantity")).as("wavg"),
-        count(lit(1)).as("n"))
-      .select(col("l_returnflag"), round(col("wavg"), 6).as("wavg_price"), col("n"))
-      .orderBy(col("l_returnflag"))
-
-  /** Distribution-drift monitor: per-bin PSI of the latest day's event
-    * values against all prior days ([[graft.operators.Drift.psiBins]]).
-    */
-  private def q109(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-    val maxDate = ev.agg(max(evDateId)).head().getString(0)
-    graft.operators.Drift.psiBins(ev, "value", evDateId === maxDate, bins = 10)
-      .orderBy(col("bin"))
-  }
-
-  /** Transitive hierarchy closure by pointer jumping: every customer key's
-    * root and depth in the synthetic decimal-digit forest (parent = key/10,
-    * roots below 10) — ⌈log₂ depth⌉ self-join rounds, not a depth-long
-    * recursive walk ([[graft.operators.Graph.rootClosure]]).
-    */
-  private def q110(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Graph.rootClosure(
-      T(s, dir, "customer").select(col("c_custkey").as("id"),
-        when(col("c_custkey") >= 10, expr("c_custkey DIV 10")).as("parent")))
-      .orderBy(col("id"))
-
-  /** Lakehouse maintenance: the daily rollup is written fragmented (4-way
-    * repartition → up to 4 small files per partition), the over-budget
-    * partitions are detected from scan metadata, compacted, and the lake
-    * read back row-identical ([[PartitionedLake.overBudgetPartitions]] /
-    * `compact`). Small files are the classic 100 TB scan killer.
-    */
-  private def q111(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q111")
-    val daily = T(s, dir, "events")
-      .groupBy(evDateId.as("date_id"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sumx(col("value")).as("total_value"))
-      .repartition(4)
-    PartitionedLake.writeAll(daily, lake, Seq("date_id"))
-    val over = PartitionedLake.overBudgetPartitions(s, lake, "date_id", maxFiles = 1)
-    if (over.nonEmpty) PartitionedLake.compact(s, lake, "date_id", over)
-    PartitionedLake.read(s, lake)
-      .select(col("date_id").cast("string").as("date_id"), col("event_type"),
-        col("n_events"), col("total_value"))
-      .orderBy(col("date_id"), col("event_type"))
-  }
-
-  /** Approximate percentile sketch (Greenwald–Khanna `percentile_approx`)
-    * beside the exact answer's grouping — rows-only like q37: sketch
-    * internals are engine-specific by nature; SketchesSpec bounds the
-    * rank error against the exact percentiles instead.
-    */
-  private def q112(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .agg(
-        percentile_approx(col("l_extendedprice"), array(lit(0.5), lit(0.9)),
-          lit(10000)).as("approx_p"),
-        count(lit(1)).as("n"))
-      .select(col("l_returnflag"),
-        col("approx_p").getItem(0).as("p50_approx"),
-        col("approx_p").getItem(1).as("p90_approx"), col("n"))
-      .orderBy(col("l_returnflag"))
-
-  /** Schema evolution across lake versions: v2 re-upserts a subset of
-    * keys WITH a new `c_tier` column; the mergeSchema as-of read surfaces
-    * pre-evolution rows with a null tier — the add-a-column migration
-    * every long-lived table eventually makes.
-    */
-  private def q113(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q113")
-    val base = T(s, dir, "customer")
-      .filter(col("c_custkey") <= 300)
-      .select(col("c_custkey"), col("c_name"))
-    VersionedLake.writeVersion(base.withColumn("op", lit("U")), lake, 1L)
-    val tiered = base.filter(col("c_custkey") % 5 === 0)
-      .withColumn("c_tier",
-        when(col("c_custkey") % 3 === 0, "gold")
-          .when(col("c_custkey") % 3 === 1, "silver")
-          .otherwise("bronze"))
-      .withColumn("op", lit("U"))
-    VersionedLake.writeVersion(tiered, lake, 2L)
-    VersionedLake.readAsOf(s, lake, 2L, Seq("c_custkey"), mergeSchema = true)
-      .select(col("c_custkey"), col("c_name"), col("c_tier"),
-        col("version").cast("long").as("version"))
-      .orderBy(col("c_custkey"))
-  }
-
-  /** Raw binary-file ingest via the `binaryFile` source — how image/audio
-    * corpora actually enter a lake (one row per file: path, length,
-    * payload). Files are staged deterministically from nation names so
-    * the oracle can recompute every md5; at 100 TB the same reader fans
-    * file listings across executors and the payload column feeds the
-    * multimodal pipeline (q33).
-    */
-  private def q114(s: SparkSession, dir: String): DataFrame = {
-    val stage = scratch(dir, "q114")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(stage))
-    // dim-sized driver staging: 25 rows
-    T(s, dir, "nation").select(col("n_name")).collect().map(_.getString(0))
-      .foreach { n =>
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(stage, s"$n.bin"), n.getBytes("UTF-8"))
-      }
-    s.read.format("binaryFile").load(s"$stage/*.bin")
-      .select(
-        element_at(split(col("path"), "/"), -1).as("file_name"),
-        col("length"), md5(col("content")).as("content_md5"))
-      .orderBy(col("file_name"))
-  }
-
-  /** Higher-order array functions over per-order price lists: collect the
-    * order's prices in line order, then size / filter / exists / a
-    * left-to-right aggregate fold — all inside whole-stage codegen, the
-    * nested-data API a DataFrame user reaches for before exploding.
-    */
-  private def q115(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "lineitem")
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_list(
-        struct(col("l_linenumber"), col("l_extendedprice")))).as("lines"))
-      .select(col("l_orderkey"),
-        transform(col("lines"), l => l.getField("l_extendedprice")).as("prices"))
-      .select(
-        col("l_orderkey"),
-        size(col("prices")).cast("long").as("n_items"),
-        size(filter(col("prices"), p => p > 3000.0)).cast("long").as("n_big"),
-        // left-to-right double fold: same order both engines → deterministic
-        round(aggregate(col("prices"), lit(0.0), (acc, p) => acc + p), 6)
-          .as("total"),
-        exists(col("prices"), p => p > 50000.0).as("has_jumbo"))
-      .orderBy(col("l_orderkey"))
-
-  /** Equal-frequency (quartile) discretization per priority group: exact
-    * discrete boundaries from the q18 percentile machinery, broadcast
-    * back, rows bucketed by boundary compare — the scalable two-phase
-    * shape (never a global single-partition ntile).
-    */
-  private def q116(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders")
-    val bounds = Relational.discretePercentiles(
-      o, "o_orderpriority", "o_totalprice", "o_orderkey", Seq(0.25, 0.5, 0.75))
-      .select(col("o_orderpriority"), col("p25"), col("p50"), col("p75"))
-    o.join(broadcast(bounds), Seq("o_orderpriority"))
-      .withColumn("bucket",
-        when(col("o_totalprice") <= col("p25"), 1L)
-          .when(col("o_totalprice") <= col("p50"), 2L)
-          .when(col("o_totalprice") <= col("p75"), 3L)
-          .otherwise(4L))
-      .groupBy(col("o_orderpriority"), col("bucket"))
-      .agg(count(lit(1)).as("n"),
-        min(col("o_totalprice")).as("lo"), max(col("o_totalprice")).as("hi"))
-      .orderBy(col("o_orderpriority"), col("bucket"))
-  }
-
-  /** Transaction-log lake ([[graft.sources.TxLake]]): three atomic
-    * commits — history append, latest-day partial append, then a full
-    * corrected overwrite — read back both as-of v2 (history + partial)
-    * and latest (the overwrite), tagged. Old snapshots stay readable
-    * because removes are logical; visibility is the log entry, so every
-    * commit is all-or-nothing no matter how many files it lands.
-    */
-  private def q117(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q117")
-    // fresh log per run: commits accumulate, and this query's meaning is
-    // the exact 3-commit history
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val daily = T(s, dir, "events")
-      .groupBy(evDateId.as("date_id"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sumx(col("value")).as("total_value"))
-    val maxDate = daily.agg(max(col("date_id"))).head().getString(0)
-    TxLake.commit(s, lake, daily.filter(col("date_id") =!= maxDate))
-    TxLake.commit(s, lake,
-      daily.filter(col("date_id") === maxDate && col("event_type") =!= "error"))
-    TxLake.commit(s, lake, daily, overwrite = true)
-    def snap(v: Long, tag: String) =
-      TxLake.readSnapshot(s, lake, v).withColumn("snap", lit(tag))
-    snap(2L, "v2").unionByName(snap(Long.MaxValue, "latest"))
-      .select(col("snap"), col("date_id"), col("event_type"),
-        col("n_events"), col("total_value"))
-      .orderBy(col("snap"), col("date_id"), col("event_type"))
-  }
-
-  /** Incremental corpus dedup: the new batch's unique documents against
-    * the already-ingested history's fingerprint set
-    * ([[Dedup.incrementalNew]]) — history is never re-deduplicated.
-    */
-  private def q118(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
-    Dedup.incrementalNew(
-      docs.filter(col("doc_id") <= 250), docs.filter(col("doc_id") > 250),
-      "doc_id", "text")
-      .orderBy(col("doc_id"))
-  }
-
-  /** Mergeable HLL sketch rollup (rows-only by design, like q37): per-day
-    * user sketches built once, the month's distinct estimated by MERGING
-    * the sketches — never re-scanning history. The mergeability is the
-    * entire point at 100 TB: day sketches are kilobytes, the rollup is a
-    * union of sketches, and SketchesSpec bounds the estimate against the
-    * exact distinct.
-    */
-  private def q119(s: SparkSession, dir: String): DataFrame = {
-    val daily = T(s, dir, "events")
-      .groupBy(evDateId.as("date_id"))
-      .agg(hll_sketch_agg(col("user_id")).as("sk"),
-        count_distinct(col("user_id")).as("exact_users"))
-    val perDay = daily.select(col("date_id"),
-      hll_sketch_estimate(col("sk")).as("approx_users"), col("exact_users"))
-    val total = daily.agg(
-      hll_sketch_estimate(hll_union_agg(col("sk"))).as("approx_users"),
-      lit(null).cast("long").as("exact_users"))
-      .select(lit("ALL").as("date_id"), col("approx_users"), col("exact_users"))
-    perDay.unionByName(total).orderBy(col("date_id"))
-  }
-
-  /** Row-level DELETE (erasure): the lake is committed in three slices,
-    * then every `user_id ≡ 0 (mod 7)` row is deleted by rewriting ONLY
-    * the files that contain matches, swapped in atomically
-    * ([[TxLake.deleteWhere]]) — the right-to-be-forgotten pass that does
-    * not rewrite a 100 TB table.
-    */
-  private def q120(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q120")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val ev = T(s, dir, "events")
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    (0 to 2).foreach(i =>
-      TxLake.commit(s, lake, ev.filter(col("user_id") % 3 === i)))
-    TxLake.deleteWhere(s, lake, col("user_id") % 7 === 0)
-    TxLake.readSnapshot(s, lake)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("total_value"),
-        count_distinct(col("user_id")).as("n_users"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Exactly-once streaming sink: micro-batches commit into the
-    * transaction-log lake keyed by batchId, a deliberate duplicate
-    * delivery is absorbed by the tag, and the read-back aggregate
-    * hash-matches the batch answer ([[graft.streaming.StreamVerify.exactlyOnceLake]]).
-    */
-  private def q121(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.exactlyOnceLake(s, eventsPath(dir), scratch(dir, "q121"))
-      .groupBy(col("date_id"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("total_value"))
-      .orderBy(col("date_id"), col("event_type"))
-
-  /** Multi-touch attribution: each purchase's value is split equally
-    * across the user's clicks in the preceding hour (fractional
-    * allocation), then rolled up per user on the exact-decimal grid. The
-    * touch join is a plain user equi-join + time filter — never a time
-    * theta-join.
-    */
-  private def q122(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-    val p = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("pid"), col("user_id"), evSec.as("p_sec"),
-        col("value"))
-    val c = ev.filter(col("event_type") === "click")
-      .select(col("event_id").as("cid"), col("user_id"), evSec.as("c_sec"))
-    val touches = p.join(c, Seq("user_id"))
-      .filter(col("c_sec") >= col("p_sec") - 3600 && col("c_sec") < col("p_sec"))
-    val w = Window.partitionBy(col("pid"))
-    touches
-      .withColumn("n_t", count(lit(1)).over(w))
-      .select(col("user_id"),
-        (col("value") / col("n_t")).cast(DecimalType(18, 9)).as("share"))
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_touches"),
-        round(sum(col("share")).cast("double"), 6).as("attributed_value"))
-      .orderBy(col("user_id"))
-  }
-
-  /** Market-basket co-occurrence: the most frequent part pairs bought in
-    * the same order. The self-join keys on the order (equi), so pair
-    * generation is bounded by per-order basket size, never |parts|².
-    */
-  private def q123(s: SparkSession, dir: String): DataFrame =
-    // per-order pair rows via the collect_list expansion (one exchange
-    // fewer than the order-keyed self-join; pair set identical)
-    graft.operators.Affinity.basketPairRows(
-        T(s, dir, "lineitem"), "l_orderkey", "l_partkey")
-      .groupBy(col("item_a").as("p1"), col("item_b").as("p2"))
-      .agg(count(lit(1)).as("n_orders"))
-      .orderBy(col("n_orders").desc, col("p1"), col("p2"))
-      .limit(50)
-
-  /** Robust outlier detection per priority group: median and MAD (median
-    * absolute deviation) from the exact discrete-percentile machinery,
-    * then rows flagged where |x − med| > 3·MAD — resistant to the very
-    * outliers it hunts, unlike mean/stddev fences.
-    */
-  private def q124(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders")
-      .select(col("o_orderpriority"), col("o_orderkey"), col("o_totalprice"))
-    val med = Relational.discretePercentiles(
-      o, "o_orderpriority", "o_totalprice", "o_orderkey", Seq(0.5))
-      .select(col("o_orderpriority"), col("p50").as("med"))
-    val dev = o.join(broadcast(med), Seq("o_orderpriority"))
-      .withColumn("dev", abs(col("o_totalprice") - col("med")))
-    val mad = Relational.discretePercentiles(
-      dev, "o_orderpriority", "dev", "o_orderkey", Seq(0.5))
-      .select(col("o_orderpriority"), col("p50").as("mad"))
-    dev.join(broadcast(mad), Seq("o_orderpriority"))
-      .groupBy(col("o_orderpriority"))
-      .agg(max(col("med")).as("med"), max(col("mad")).as("mad"),
-        sum(when(col("dev") > col("mad") * 3.0, 1L).otherwise(0L)).as("n_outliers"),
-        count(lit(1)).as("n"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  /** Log-based data skipping on the transaction lake: commits record each
-    * file's [min, max] of `user_id`, and the pruned read opens ONLY files
-    * whose logged range overlaps the predicate — a skipped file costs
-    * zero I/O, not even a footer fetch ([[TxLake.readPruned]];
-    * TxLakeSpec asserts the file count). Slices are committed on
-    * disjoint user ranges so the pruning provably bites.
-    */
-  private def q125(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q125")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val ev = T(s, dir, "events")
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    val m = ev.agg(max(col("user_id"))).head().getLong(0)
-    val t = m / 3
-    TxLake.commit(s, lake, ev.filter(col("user_id") <= t).coalesce(1),
-      statsCol = "user_id")
-    TxLake.commit(s, lake,
-      ev.filter(col("user_id") > t && col("user_id") <= 2 * t).coalesce(1),
-      statsCol = "user_id")
-    TxLake.commit(s, lake, ev.filter(col("user_id") > 2 * t).coalesce(1),
-      statsCol = "user_id")
-    TxLake.readPruned(s, lake, 1L, t)
-      .filter(col("user_id").between(1L, t)) // exact filter atop the pruning
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("total_value"))
-      .orderBy(col("event_type"))
-  }
-
-  /** SCD2 apply-changes: close each changed key's current dimension row
-    * at the change's effective date and append the new current version
-    * ([[graft.operators.Scd2.applyChanges]]) — the incremental other
-    * half of q64's derived history.
-    */
-  private def q126(s: SparkSession, dir: String): DataFrame = {
-    val dim = T(s, dir, "customer")
-      .filter(col("c_custkey") <= 200)
-      .select(col("c_custkey"), col("c_mktsegment").as("segment"),
-        lit("2020-01-01").as("eff_from"),
-        lit(null).cast("string").as("eff_to"))
-    val changes = dim.filter(col("c_custkey") % 4 === 0)
-      .select(col("c_custkey"), lit("MOVED").as("segment"),
-        lit("2024-06-01").as("eff_from"))
-    graft.operators.Scd2.applyChanges(dim, changes, "c_custkey", "eff_from", "eff_to")
-      .orderBy(col("c_custkey"), col("eff_from"))
-  }
-
-  /** OPTIMIZE + VACUUM lifecycle on the transaction lake: three
-    * fragmented commits are compacted into one file in a single atomic
-    * log commit, then retention physically reclaims the superseded
-    * files — the read-back stays row-identical through both
-    * ([[TxLake.optimize]] / [[TxLake.vacuum]]; protocol details in
-    * TxLakeSpec).
-    */
-  private def q127(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q127")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val ev = T(s, dir, "events")
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    (0 to 2).foreach(i =>
-      TxLake.commit(s, lake, ev.filter(col("user_id") % 3 === i)))
-    val v = TxLake.optimize(s, lake)
-    TxLake.vacuum(lake, retainVersion = v)
-    TxLake.readSnapshot(s, lake)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("total_value"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Chi-square independence test of event type × weekday: contingency
-    * cells from one aggregation, expected counts from row/column/total
-    * marginals (window sums over the 42-cell frame — aggregated, tiny),
-    * per-cell terms on the decimal grid. The model-drift hypothesis test
-    * beside q109's PSI. Terms sum over OBSERVED cells (both engines
-    * replay the same convention).
-    */
-  private def q128(s: SparkSession, dir: String): DataFrame = {
-    val cells = T(s, dir, "events")
-      .select(col("event_type").as("t"), dayofweek(evTs).as("d"))
-      .groupBy(col("t"), col("d"))
-      .agg(count(lit(1)).as("o"))
-    val tot = cells
-      .withColumn("rt", sum(col("o")).over(Window.partitionBy(col("t"))))
-      .withColumn("ct", sum(col("o")).over(Window.partitionBy(col("d"))))
-      .withColumn("n", sum(col("o")).over(Window.partitionBy()))
-    val e = col("rt").cast("double") * col("ct").cast("double") /
-      col("n").cast("double")
-    val term = ((col("o").cast("double") - e) * (col("o").cast("double") - e) / e)
-      .cast(DecimalType(28, 9))
-    tot.select(col("t"), col("d"), term.as("tm"))
-      .agg(
-        round(sum(col("tm")).cast("double"), 6).as("chi2"),
-        ((count_distinct(col("t")) - 1) * (count_distinct(col("d")) - 1))
-          .as("dof"))
-  }
-
-  /** Audio-style overlapping frame windows over the binary payloads
-    * (256-byte window, 128 hop): the featurizer framing pass, one explode,
-    * per-frame md5 so the oracle replays every byte slice
-    * ([[graft.operators.Multimodal.frameWindows]]).
-    */
-  private def q129(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Multimodal.frameWindows(
-      graft.operators.Multimodal.attachPayload(
-        T(s, dir, "documents").filter(col("doc_id") <= 200)))
-      .orderBy(col("doc_id"), col("frame_idx"))
-
-  /** Two-phase table reconciliation ([[graft.operators.Reconcile]]): B is
-    * the customer table with deterministic drift injected — balances
-    * bumped for keys ≡ 0 (mod 97), keys ≡ 0 (mod 89) dropped, one
-    * foreign row added — and the bucketed checksum compare must surface
-    * exactly those keys, reading row-level data only from disagreeing
-    * buckets.
-    */
-  private def q130(s: SparkSession, dir: String): DataFrame = {
-    val a = T(s, dir, "customer")
-      .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
-        col("c_acctbal").cast(DecimalType(12, 2)).as("c_acctbal"),
-        col("c_mktsegment"))
-    val b = a.filter(col("c_custkey") % 89 =!= 0)
-      .withColumn("c_acctbal",
-        when(col("c_custkey") % 97 === 0, col("c_acctbal") + 1)
-          .otherwise(col("c_acctbal")))
-      .unionByName(s.sql(
-        """SELECT CAST(10000000 AS BIGINT) AS c_custkey, 'Customer#drift' AS c_name,
-          |CAST(0 AS INT) AS c_nationkey, CAST(1.00 AS DECIMAL(12,2)) AS c_acctbal,
-          |'BUILDING' AS c_mktsegment""".stripMargin))
-    graft.operators.Reconcile.diffKeys(a, b, "c_custkey", buckets = 64)
-      .orderBy(col("c_custkey"))
-  }
-
-  /** Growth accounting: every active (user, day) classified as new /
-    * retained / resurrected from the user's previous active day, plus
-    * churn events the day after an activity gap opens — the standard
-    * DAU decomposition (new + retained + resurrected − churned explains
-    * every day-over-day change). One distinct + one per-user window.
-    */
-  private def q131(s: SparkSession, dir: String): DataFrame = {
-    val days = T(s, dir, "events")
-      .select(col("user_id"), to_date(evDateId).as("day"))
-      .distinct()
-    val maxDay = days.agg(max(col("day"))).head().getDate(0)
-    val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    val marked = days
-      .withColumn("prev", lag(col("day"), 1).over(w))
-      .withColumn("next", lead(col("day"), 1).over(w))
-    val activity = marked.select(col("day"),
-      when(col("prev").isNull, "new")
-        .when(datediff(col("day"), col("prev")) === 1, "retained")
-        .otherwise("resurrected").as("kind"))
-    val churn = marked
-      .filter((col("next").isNull || datediff(col("next"), col("day")) > 1) &&
-        date_add(col("day"), 1) <= lit(maxDay))
-      .select(date_add(col("day"), 1).as("day"), lit("churned").as("kind"))
-    activity.unionByName(churn)
-      .groupBy(col("day"))
-      .agg(
-        sum(when(col("kind") === "new", 1L).otherwise(0L)).as("n_new"),
-        sum(when(col("kind") === "retained", 1L).otherwise(0L)).as("n_retained"),
-        sum(when(col("kind") === "resurrected", 1L).otherwise(0L)).as("n_resurrected"),
-        sum(when(col("kind") === "churned", 1L).otherwise(0L)).as("n_churned"))
-      .select(col("day").cast("string").as("day"), col("n_new"),
-        col("n_retained"), col("n_resurrected"), col("n_churned"))
-      .orderBy(col("day"))
-  }
-
-  /** Time-constrained conversion funnel: of the users whose FIRST view
-    * happened on day D, how many purchased within 24 hours of it — the
-    * windowed complement of q50's unbounded ordering funnel. The
-    * conversion probe is a user equi-join with the window as a residual
-    * filter condition (left-semi), never a time theta-join.
-    */
-  private def q132(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-    val firstView = ev.filter(col("event_type") === "view")
-      .groupBy(col("user_id")).agg(min(evSec).as("v_sec"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), evSec.as("p_sec"))
-    val converted = firstView.join(purchases,
-        col("user_id") === col("p_user") &&
-          col("p_sec") > col("v_sec") && col("p_sec") <= col("v_sec") + 86400L,
-        "left_semi")
-      .select(col("user_id"), lit(1L).as("c"))
-    firstView.join(converted, Seq("user_id"), "left")
-      .groupBy(date_format(timestamp_seconds(col("v_sec")).cast("timestamp_ntz"),
-        "yyyy-MM-dd").as("view_day"))
-      .agg(count(lit(1)).as("n_first_views"),
-        sum(coalesce(col("c"), lit(0L))).as("n_converted_24h"))
-      .withColumn("conversion_rate",
-        round(col("n_converted_24h").cast("double") /
-          col("n_first_views").cast("double"), 6))
-      .orderBy(col("view_day"))
-  }
-
-  /** XML source/sink round-trip (Spark 4's native XML datasource): the
-    * nation dimension written as `<nation>` row elements and read back
-    * under an explicit schema — no runaway inference pass, same posture
-    * as the JSON/CSV/ORC sources (q34/q35/q73).
-    */
-  private def q133(s: SparkSession, dir: String): DataFrame = {
-    val path = scratch(dir, "q133")
-    T(s, dir, "nation")
-      .select(col("n_nationkey").cast("long"), col("n_name"),
-        col("n_regionkey").cast("long"))
-      .coalesce(1)
-      .write.mode("overwrite").option("rowTag", "nation").format("xml").save(path)
-    s.read.format("xml")
-      .option("rowTag", "nation")
-      .schema("n_nationkey LONG, n_name STRING, n_regionkey LONG")
-      .load(path)
-      .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
-      .orderBy(col("n_nationkey"))
-  }
-
-  /** Image-style fixed-grid tiling over the binary payloads (64-byte row
-    * stride, 16×16-byte tiles): the patchification pass every vision
-    * pipeline applies; per-tile md5 so the oracle replays every gathered
-    * byte slice ([[graft.operators.Multimodal.tileGrid]]).
-    */
-  private def q134(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Multimodal.tileGrid(
-      graft.operators.Multimodal.attachPayload(
-        T(s, dir, "documents").filter(col("doc_id") <= 200)))
-      .orderBy(col("doc_id"), col("tile_r"), col("tile_c"))
-
-  /** The idempotent daily job-runner surface ([[graft.JobRunner]]): two
-    * named jobs committed for the max event day, then the SAME day re-run
-    * — the gate output reads the LAKE back after the re-run, so a
-    * non-idempotent runner (duplicate rows, partition drift) breaks the
-    * hash. The reference's daily-cadence posture, minus the scheduler.
-    */
-  private def q137(s: SparkSession, dir: String): DataFrame = {
-    val day = T(s, dir, "events").agg(max(evDateId)).head().getString(0)
-    val lake = scratch(dir, "q137")
-    val jobs = Seq(
-      JobRunner.Job("daily_type_stats", (ss, d) =>
-        T(ss, d, "events")
-          .groupBy(evDateId.as("date_id"), col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast(DecimalType(18, 2))).cast("double")
-              .as("total_value"))),
-      JobRunner.Job("daily_users", (ss, d) =>
-        T(ss, d, "events")
-          .groupBy(evDateId.as("date_id"))
-          .agg(countDistinct(col("user_id")).as("n"),
-            sum(col("value").cast(DecimalType(18, 2))).cast("double")
-              .as("total_value"))))
-    JobRunner.runDay(s, dir, lake, day, jobs)
-    JobRunner.runDay(s, dir, lake, day, jobs) // safe re-run, proven by hash
-    val stats = graft.sources.PartitionedLake
-      .read(s, JobRunner.tablePath(lake, "daily_type_stats"))
-      .filter(col("date_id") === day)
-      .select(lit("daily_type_stats").as("job"),
-        col("event_type").as("key"), col("n"), col("total_value"))
-    val users = graft.sources.PartitionedLake
-      .read(s, JobRunner.tablePath(lake, "daily_users"))
-      .filter(col("date_id") === day)
-      .select(lit("daily_users").as("job"), lit("ALL").as("key"),
-        col("n"), col("total_value"))
-    stats.unionByName(users).orderBy(col("job"), col("key"))
-  }
-
-  /** Concat-and-chunk sequence packing at capacity 512 with a small
-    * bucket size so the two-phase distributed prefix sum genuinely runs
-    * multi-bucket in the gate ([[graft.operators.TextPipeline.packSequences]]).
-    */
-  private def q138(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.packSequences(
-      T(s, dir, "documents"), capacity = 512L, bucketSize = 256L)
-      .orderBy(col("doc_id"))
-
-  /** Per-document repetition (boilerplate) stats over word 3-grams
-    * ([[graft.operators.TextPipeline.repetitionStats]]).
-    */
-  private def q139(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.repetitionStats(T(s, dir, "documents"), n = 3)
-      .orderBy(col("doc_id"))
-
-  /** PII redaction ([[graft.operators.TextPipeline.redactPii]]) over
-    * deterministic synthesized PII text (the declared input-synthesis
-    * step: the corpus tables carry no emails, so the gate fabricates
-    * name+email+balance strings from the customer dimension and the
-    * oracle fabricates the identical ones).
-    */
-  private def q140(s: SparkSession, dir: String): DataFrame = {
-    val t = T(s, dir, "customer").select(col("c_custkey"),
-      concat(col("c_name"), lit(" <user"), col("c_custkey").cast("string"),
-        lit("@example.com> bal "),
-        col("c_acctbal").cast(DecimalType(12, 2)).cast("string")).as("text"))
-    graft.operators.TextPipeline.redactPii(t, "text")
-      .select(col("c_custkey"), col("n_emails").cast("long").as("n_emails"),
-        col("n_digit_runs").cast("long").as("n_digit_runs"),
-        md5(col("redacted")).as("red_md5"))
-      .orderBy(col("c_custkey"))
-  }
-
-  /** Benchmark-contamination check: doc_id ≡ 0 (mod 97) is the declared
-    * held-out benchmark set; every other document reports the share of
-    * its distinct word 4-gram shingles that occur anywhere in the
-    * (4 rather than the classic 8-13: the synthetic corpus has no real
-    * cross-document 8-gram overlap, and the hit path must actually fire)
-    * benchmark ([[graft.operators.TextPipeline.contamination]]).
-    */
-  private def q141(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.contamination(
-      T(s, dir, "documents"), col("doc_id") % 97 === 0, n = 4)
-      .orderBy(col("doc_id"))
-
-  /** Blocked fuzzy record linkage ([[graft.operators.Linkage.fuzzyJoin]]):
-    * the B side is the customer names with their last two characters
-    * swapped (deterministic dirty-data injection); blocking on the first
-    * seven digits of the customer number bounds candidate pairs per
-    * block, and the codegen Jaro-Winkler threshold keeps swap-pairs
-    * (one transposition, sim ≈ 0.989) while rejecting mere same-block
-    * neighbors (two substitutions, sim ≈ 0.956).
-    */
-  private def q143(s: SparkSession, dir: String): DataFrame = {
-    val cust = T(s, dir, "customer")
-    val dirty = cust.select(col("c_custkey"),
-      concat(
-        expr("substring(c_name, 1, length(c_name) - 2)"),
-        expr("substring(c_name, length(c_name), 1)"),
-        expr("substring(c_name, length(c_name) - 1, 1)")).as("c_name"))
-    graft.operators.Linkage.fuzzyJoin(
-      cust, dirty, "c_custkey", "c_name",
-      expr("substring(c_name, 10, 7)"), threshold = 0.98)
-      .orderBy(col("a_key"), col("b_key"))
-  }
-
-  /** Incremental JOIN-view maintenance
-    * ([[graft.operators.Incremental.mergeJoinAppend]]): the materialized
-    * orders ⋈ customer view is built WITHOUT the late slice (orderkeys ≡
-    * 0 mod 7 of the max month), then the late delta merges in by
-    * enriching only the delta and rewriting only the touched month. The
-    * read-back aggregate must equal the plain full join — proving the
-    * maintained view converged.
-    */
-  private def q144(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q144")
-    val orders = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
-      date_format(col("o_orderdate"), "yyyy-MM").as("month"),
-      col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
-    val maxMonth = orders.agg(max(col("month"))).head().getString(0)
-    val dim = T(s, dir, "customer")
-      .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))
-    val isLate = col("o_orderkey") % 7 === 0 && col("month") === maxMonth
-    graft.sources.PartitionedLake.writeAll(
-      orders.filter(!isLate).join(dim, Seq("o_custkey")), lake, Seq("month"))
-    graft.operators.Incremental.mergeJoinAppend(
-      s, lake, orders.filter(isLate), dim, "o_custkey", "month")
-    graft.sources.PartitionedLake.read(s, lake)
-      .groupBy(col("month").cast("string").as("month"),
-        col("c_mktsegment").as("segment"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("price")).cast("double").as("total"))
-      .orderBy(col("month"), col("segment"))
-  }
-
-  /** TxLake row-level UPDATE ([[TxLake.updateWhere]]): purchases get a
-    * +100 value bump through an affected-file-only rewrite; the read-back
-    * aggregate must carry exactly the bumped values.
-    */
-  private def q145(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLake
-    val lake = scratch(dir, "q145") + "/lake"
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val ev = T(s, dir, "events").select(col("event_id"), col("event_type"),
-      col("value").cast(DecimalType(18, 2)).as("value"))
-    TxLake.commit(s, lake, ev.filter(col("event_id") % 2 === 0).coalesce(1))
-    TxLake.commit(s, lake, ev.filter(col("event_id") % 2 =!= 0).coalesce(1))
-    TxLake.updateWhere(s, lake, col("event_type") === "purchase",
-      Map("value" -> (col("value") + lit(100))))
-    TxLake.readSnapshot(s, lake)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value")).cast("double").as("total_value"))
-      .orderBy(col("event_type"))
-  }
-
-  /** TxLake MERGE by key ([[TxLake.mergeByKey]]): balances zeroed for
-    * keys ≤ 100 (matched-row replacement), five out-of-range keys
-    * inserted; only files containing matched keys are rewritten.
-    */
-  private def q146(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLake
-    val lake = scratch(dir, "q146") + "/lake"
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val cust = T(s, dir, "customer")
-      .select(col("c_custkey"),
-        col("c_acctbal").cast(DecimalType(12, 2)).as("bal"))
-      .filter(col("c_custkey") <= 500)
-    TxLake.commit(s, lake, cust.filter(col("c_custkey") <= 250).coalesce(1))
-    TxLake.commit(s, lake, cust.filter(col("c_custkey") > 250).coalesce(1))
-    val updates = cust.filter(col("c_custkey") <= 100)
-      .select(col("c_custkey"), lit(java.math.BigDecimal.ZERO)
-        .cast(DecimalType(12, 2)).as("bal"))
-      .unionByName(s.range(10001, 10006).select(col("id").as("c_custkey"),
-        lit(java.math.BigDecimal.ONE).cast(DecimalType(12, 2)).as("bal")))
-    TxLake.mergeByKey(s, lake, updates, "c_custkey")
-    TxLake.readSnapshot(s, lake)
-      .select(col("c_custkey"), col("bal").cast("double").as("bal"))
-      .orderBy(col("c_custkey"))
-  }
-
-  /** Per-key trend regression ([[graft.operators.Trend.olsPerKey]]):
-    * closed-form OLS slope of hourly volume per event type — one
-    * aggregation per key, x re-based so every sum stays integer-exact.
-    */
-  private def q147(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .select(expr("ts div 1000000000 div 3600").as("hour_id"),
-        col("event_type"))
-      .groupBy(col("event_type"), col("hour_id"))
-      .agg(count(lit(1)).as("n"))
-    graft.operators.Trend.olsPerKey(hourly, "event_type", "hour_id", "n")
-      .orderBy(col("event_type"))
-  }
-
-  /** Seasonal anomaly detection
-    * ([[graft.operators.Trend.seasonalAnomalies]]): hourly volume per
-    * event type against its hour-of-day profile, flagged beyond 2
-    * residual standard deviations — the batch complement to the
-    * streaming trailing-baseline alerts (q136).
-    */
-  private def q148(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .select(expr("ts div 1000000000 div 3600").as("hour_id"),
-        col("event_type"))
-      .groupBy(col("event_type"), col("hour_id"))
-      .agg(count(lit(1)).as("n"))
-    graft.operators.Trend.seasonalAnomalies(
-      hourly, "event_type", "hour_id", 24, "n", 2.0)
-      .orderBy(col("event_type"), col("hour_id"))
-  }
-
-  /** TxLake zero-copy branching ([[TxLake.branch]]): fork at v2, commit
-    * divergent slices to branch and main, and aggregate BOTH sides —
-    * isolation in each direction is what the hash proves.
-    */
-  private def q149(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLake
-    val lake = scratch(dir, "q149") + "/lake"
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val ev = T(s, dir, "events").select(col("event_id"), col("event_type"),
-      col("value").cast(DecimalType(18, 2)).as("value"))
-    def slice(m: Int) = ev.filter(col("event_id") % 4 === m).coalesce(1)
-    TxLake.commit(s, lake, slice(0))
-    TxLake.commit(s, lake, slice(1))
-    val bp = TxLake.branch(lake, "exp")
-    TxLake.commit(s, bp, slice(3))   // branch-only commit
-    TxLake.commit(s, lake, slice(2)) // main-only commit after the fork
-    def agg(df: DataFrame, side: String) = df
-      .groupBy(lit(side).as("side"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).cast("double").as("total"))
-    agg(TxLake.readSnapshot(s, lake), "main")
-      .unionByName(agg(TxLake.readSnapshot(s, bp), "exp"))
-      .orderBy(col("side"), col("event_type"))
-  }
-
-  /** Persisted IVF index: build once into the lake (cells partitioned by
-    * centroid id), query through [[graft.operators.Similarity.queryIvfIndex]]
-    * — must equal q40's build-and-query results exactly (shared oracle).
-    */
-  private def q150(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    val idx = scratch(dir, "q150") + "/ivf"
-    graft.operators.Similarity.buildIvfIndex(emb, "vec_id", "embedding", 16, idx)
-    graft.operators.Similarity.queryIvfIndex(
-      s, idx, emb.filter(col("vec_id") < 10), "vec_id", "embedding")
-  }
-
-  /** Footer-only table stats ([[graft.sources.FooterStats.tableStats]]):
-    * COUNT/MIN/MAX pushed into the parquet scan (V2 aggregate pushdown),
-    * answered from footer metadata — plan-audited in FooterStatsSpec.
-    */
-  private def q151(s: SparkSession, dir: String): DataFrame =
-    graft.sources.FooterStats.tableStats(
-      s, s"$dir/orders.parquet", Seq("o_orderkey", "o_totalprice"))
-
-  /** Leakage-safe split ([[graft.operators.TextPipeline.leakageSafeSplit]]):
-    * split membership decided per exact-duplicate group, so duplicates
-    * never straddle train/val/test.
-    */
-  private def q152(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.leakageSafeSplit(T(s, dir, "documents"))
-      .orderBy(col("doc_id"))
-
-  /** TxLake change-data-feed ([[TxLake.changeFeed]]): the NET row-level
-    * changes of each commit after the initial load — v2 appends the even
-    * orders, v3 erases one custkey decile — derived from the file-level
-    * log and reading only the files those commits touched. The v3 rewrite
-    * re-writes survivors into fresh files; they cancel in the feed's
-    * EXCEPT ALL and must not appear.
-    */
-  private def q153(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q153")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val o = T(s, dir, "orders").select(
-      col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-      col("o_orderstatus"))
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 2 === 1))
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 2 === 0))
-    TxLake.deleteWhere(s, lake, col("o_custkey") % 10 === 0)
-    TxLake.changeFeed(s, lake, fromVersion = 1L)
-      .orderBy(col("_commit_version"), col("_change_type"), col("o_orderkey"))
-  }
-
-  /** Persisted MinHash-LSH near-dup index ([[Dedup.writeMinhashIndex]] /
-    * [[Dedup.probeMinhashIndex]]): the corpus (doc_id % 7 ≠ 0) is signed
-    * and banded ONCE into a band-partitioned index; the incoming batch
-    * (doc_id % 7 = 0) is signed on its own and probed against the index —
-    * near-dup detection at batch cost against a standing corpus.
-    */
-  private def q154(s: SparkSession, dir: String): DataFrame = {
-    val idx = scratch(dir, "q154_idx")
-    val docs = T(s, dir, "documents")
-    Dedup.writeMinhashIndex(
-      docs.filter(col("doc_id") % 7 =!= 0), "doc_id", "text", idx)
-    Dedup.probeMinhashIndex(
-      s, idx, docs.filter(col("doc_id") % 7 === 0), "doc_id", "text",
-      threshold = 0.3)
-      .orderBy(col("batch_id"), col("corpus_id"))
-  }
-
-  /** Canonical-copy selection after near-dup clustering
-    * ([[Dedup.canonicalPerCluster]]): MinHash pair graph → connected
-    * components → keep exactly the longest document per cluster (ties to
-    * the smallest id) — the "keep the best copy" step between dedup
-    * detection and corpus emission.
-    */
-  private def q155(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
-    val pairs = Dedup.minhashNearDupPairs(docs, "doc_id", "text", threshold = 0.3)
-    Dedup.canonicalPerCluster(docs, "doc_id", pairs, "n_chars")
-      .orderBy(col("doc_id"))
-  }
-
-  /** Rank-assigned corpus vocabulary ([[TextPipeline.vocabulary]]): the
-    * 1000 most frequent words with corpus/document frequency and running
-    * token coverage — the tokenizer-prep artifact.
-    */
-  private def q156(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.vocabulary(T(s, dir, "documents"))
-      .orderBy(col("token_id"))
-
-  /** First-iteration BPE merge statistics ([[TextPipeline.bpePairStats]]):
-    * adjacent character pairs inside words, weighted by word frequency —
-    * what a BPE trainer ranks to pick its first merge.
-    */
-  private def q157(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.bpePairStats(T(s, dir, "documents"))
-      .orderBy(col("rk"))
-
-  /** URL canonicalization ([[TextFunctions.normalizeUrl]]) over messy
-    * synthesized URLs (declared input synthesis — four deterministic
-    * dirty variants per doc: uppercased scheme/host + default port +
-    * tracking params + fragment, trailing slash, non-default port, mobile
-    * host alias): the Common-Crawl-style canonical grouping key, plus the
-    * extracted host.
-    */
-  private def q158(s: SparkSession, dir: String): DataFrame = {
-    val host = concat(col("source"), lit(".example.com"))
-    val v = pmod(col("doc_id"), lit(4))
-    val url = when(v === 0, concat(
-        lit("HTTPS://WWW."), upper(host), lit(":443/docs/"), col("doc_id"),
-        lit("?utm_source=x&ref="), col("lang"), lit("#top")))
-      .when(v === 1, concat(
-        lit("http://"), host, lit("/docs/"), col("doc_id"), lit("/")))
-      .when(v === 2, concat(
-        lit("https://"), host, lit(":8080/docs/"), col("doc_id"),
-        lit("?utm_medium=y")))
-      .otherwise(concat(
-        lit("https://m."), host, lit("/docs/"), col("doc_id")))
-    T(s, dir, "documents")
-      .select(col("doc_id"), url.as("raw_url"))
-      .select(col("doc_id"), col("raw_url"),
-        TF.normalizeUrl(col("raw_url")).as("url"))
-      .select(col("doc_id"), col("url"), TF.urlHost(col("url")).as("host"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Temperature-scaled language balancing
-    * ([[Sampling.temperatureBalanced]]): per-language quotas out of a
-    * 200-document target proportional to √count, rows chosen by the
-    * reproducible md5 rank — the multilingual-corpus construction recipe.
-    */
-  private def q159(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.temperatureBalanced(
-      T(s, dir, "documents"), "lang", "doc_id", target = 200)
-      .select(col("doc_id"), col("lang"), col("rk"), col("quota"))
-      .orderBy(col("lang"), col("rk"))
-
-  /** Point-in-time dimension join — the leakage-safe feature join: each
-    * purchase is enriched with the SCD2 state version (q64's islands) that
-    * HELD at the purchase's own second, never a later one. Dim versions
-    * sharing a `valid_from` second collapse to the highest version (the
-    * state after that second's last event) so the as-of pick is
-    * deterministic on both engines; the join itself is
-    * [[Relational.asofJoin]]'s union+window shape — one shuffle by user,
-    * no range-condition theta join.
-    */
-  private def q160(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("sec"), col("event_id"))
-    val cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ev = T(s, dir, "events")
-      .select(col("user_id"), col("event_id"), col("event_type"), evSec.as("sec"))
-    val dimAll = ev
-      .withColumn("chg",
-        when(lag(col("event_type"), 1).over(w).isNull ||
-          lag(col("event_type"), 1).over(w) =!= col("event_type"), 1).otherwise(0))
-      .withColumn("version", sum(col("chg")).over(cum))
-      .groupBy(col("user_id"), col("version"))
-      .agg(min(col("event_type")).as("state_type"),
-        min(col("sec")).as("valid_from"))
-    val wv = Window.partitionBy(col("user_id"), col("valid_from"))
-      .orderBy(col("version").desc)
-    val dim = dimAll
-      .withColumn("__vrn", row_number().over(wv))
-      .filter(col("__vrn") === 1).drop("__vrn")
-    val facts = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id").as("p_id"), col("sec"))
-    Relational.asofJoin(facts, dim, "user_id", "sec", "valid_from",
-      Seq("version", "state_type"))
-      .orderBy(col("p_id"))
-  }
-
-  /** Partition-spec evolution ([[PartitionedLake.writeSegment]] /
-    * [[PartitionedLake.readSegments]]): history stays partitioned by
-    * `date_id` while the newest day lands under the finer
-    * `(date_id, event_type)` spec — nothing is rewritten, and the
-    * layout-aware read prunes each generation under its own spec (proven
-    * in LakeSpec via inputFiles).
-    */
-  private def q161(s: SparkSession, dir: String): DataFrame = {
-    val root = scratch(dir, "q161")
-    graft.sources.LocalFs.deleteRecursively(root)
-    val ev = T(s, dir, "events").select(
-      col("event_id"), col("event_type"), col("value"), evDateId.as("date_id"))
-    val maxDate = ev.agg(max(col("date_id"))).head().getString(0)
-    PartitionedLake.writeSegment(
-      ev.filter(col("date_id") < maxDate), root, "gen1", Seq("date_id"))
-    PartitionedLake.writeSegment(
-      ev.filter(col("date_id") === maxDate), root, "gen2",
-      Seq("date_id", "event_type"))
-    PartitionedLake.readSegments(s, root)
-      // partition values may type-infer on read; the query key is a string
-      .withColumn("date_id", col("date_id").cast("string"))
-      .filter(col("event_type") === "purchase")
-      .groupBy(col("date_id"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("total_value"))
-      .orderBy(col("date_id"))
-  }
-
-  /** Per-part triangle counts in the SUPPORT-THRESHOLDED order
-    * co-occurrence graph ([[graft.operators.Graph.triangleCounts]]):
-    * parts are linked only when they co-occur in ≥ 2 orders — the
-    * standard market-basket support cut, and the step that makes the
-    * graph scale-stable (one-off random co-occurrences grow linearly
-    * with data volume, repeated ones are signal: 1.20M raw edges at
-    * sf0.1 vs 3.6k thresholded, and the thresholded count stays flat
-    * from sf0.01 to sf0.1). Triangles then come from the degree-ordered
-    * orientation, never a raw-degree wedge explosion.
-    */
-  private def q162(s: SparkSession, dir: String): DataFrame = {
-    // per-order pair rows via the collect_list expansion (one exchange
-    // fewer than the order-keyed self-join; pair set identical)
-    val edges = graft.operators.Affinity.basketPairRows(
-        T(s, dir, "lineitem"), "l_orderkey", "l_partkey")
-      .groupBy(col("item_a").as("src"), col("item_b").as("dst"))
-      .agg(count(lit(1)).as("n_orders"))
-      .filter(col("n_orders") >= 2)
-      .select(col("src"), col("dst"))
-    graft.operators.Graph.triangleCounts(edges)
-      .orderBy(col("n_triangles").desc, col("node")).limit(50)
-  }
-
-  /** Log checkpointing ([[TxLake.checkpoint]]): after the checkpoint at
-    * v2, the latest read replays only the erasure commit on top of the
-    * checkpointed file set, while time travel to v1 — BEFORE the
-    * checkpoint — still replays the full history. Both snapshots must be
-    * byte-equal to the plain replay (TxLakeSpec asserts the replay-count
-    * mechanics).
-    */
-  private def q163(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q163")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val daily = T(s, dir, "events")
-      .groupBy(evDateId.as("date_id"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sumx(col("value")).as("total_value"))
-    val maxDate = daily.agg(max(col("date_id"))).head().getString(0)
-    TxLake.commit(s, lake, daily.filter(col("date_id") < maxDate))
-    TxLake.commit(s, lake, daily.filter(col("date_id") === maxDate))
-    TxLake.checkpoint(lake)
-    TxLake.deleteWhere(s, lake, col("event_type") === "error")
-    def snap(v: Long, tag: String) =
-      TxLake.readSnapshot(s, lake, v).withColumn("snap", lit(tag))
-    snap(1L, "v1").unionByName(snap(Long.MaxValue, "latest"))
-      .select(col("snap"), col("date_id"), col("event_type"),
-        col("n_events"), col("total_value"))
-      .orderBy(col("snap"), col("date_id"), col("event_type"))
-  }
-
-  /** Deterministic sorted-run range layout
-    * ([[graft.operators.Layout.rangeSortedWrite]]): orders land as 8
-    * non-overlapping single-file sorted runs bucketed by EXACT
-    * equal-frequency boundaries (LayoutSpec proves per-file disjointness);
-    * the read-back per-bucket stats replay the boundary arithmetic.
-    */
-  private def q164(s: SparkSession, dir: String): DataFrame = {
-    val path = scratch(dir, "q164")
-    val o = T(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    graft.operators.Layout.rangeSortedWrite(o, path, "o_totalprice", "o_orderkey")
-    s.read.parquet(path)
-      .groupBy(col("bucket").cast("long").as("bucket"))
-      .agg(count(lit(1)).as("n"),
-        min(col("o_totalprice")).as("lo"), max(col("o_totalprice")).as("hi"))
-      .orderBy(col("bucket"))
-  }
-
-  /** Streaming CDC apply ([[graft.streaming.StreamVerify.cdcApply]]): the
-    * two-file staged stream merges batch-by-batch into TxLake via the
-    * recency-conditional MERGE, converging on the global
-    * latest-event-per-user no matter which batch carried it.
-    */
-  private def q165(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.cdcApply(
-      s, q135Events(s, dir), scratch(dir, "q165"))
-      .orderBy(col("user_id"))
-
-  /** Shuffle-skew diagnostic ([[Relational.skewReport]]): per-key counts
-    * vs a per-task target, flagged keys with their needed salt factor —
-    * what gets consulted before a hot key melts an executor.
-    */
-  private def q166(s: SparkSession, dir: String): DataFrame =
-    Relational.skewReport(
-      T(s, dir, "events"), "event_type", threshold = 100, targetPerTask = 500)
-      .orderBy(col("event_type"))
-
-  /** Incremental IVF maintenance ([[Similarity.appendToIvfIndex]]): the
-    * index is built from the base corpus (vec_id % 5 ≠ 0), the rest
-    * appended batch-wise against the EXISTING centroids — no
-    * re-clustering per ingest — and queries see the merged cells.
-    */
-  private def q167(s: SparkSession, dir: String): DataFrame = {
-    val idx = scratch(dir, "q167") + "/ivf"
-    val emb = T(s, dir, "embeddings")
-    Similarity.buildIvfIndex(
-      emb.filter(col("vec_id") % 5 =!= 0), "vec_id", "embedding", 16, idx)
-    Similarity.appendToIvfIndex(
-      s, idx, emb.filter(col("vec_id") % 5 === 0), "vec_id", "embedding")
-    Similarity.queryIvfIndex(
-      s, idx, emb.filter(col("vec_id") < 10), "vec_id", "embedding")
-  }
-
-  /** Mergeable per-source Count-Min sketches
-    * ([[graft.operators.Sketches.cmsMergedHeavyHitters]]): counter
-    * tables summed across sources answer the corpus heavy-hitter query —
-    * no history re-scan — with estimates equal to a direct whole-corpus
-    * sketch (spec-asserted cell equality).
-    */
-  private def q169(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sketches.cmsMergedHeavyHitters(
-      T(s, dir, "documents"), "source", "text")
-
-  /** Asymmetric containment near-dup
-    * ([[Dedup.ngramContainmentPairs]]): |A∩B|/|A| in both directions on
-    * bucketed candidates — the quote/excerpt-subset detector Jaccard
-    * structurally misses.
-    */
-  private def q170(s: SparkSession, dir: String): DataFrame =
-    Dedup.ngramContainmentPairs(T(s, dir, "documents"), "doc_id", "text")
-
-  /** Pure-SQL surface ([[graft.plans.GraftExtensions]]): the engine's
-    * codegen Catalyst expressions (`xs_hash`, `vec_cosine`) called from
-    * `spark.sql` TEXT over registered views — proving a library user
-    * needs no Scala to reach the custom-expression layer. The cosine sums
-    * are rounded then DECIMAL-accumulated, so the aggregate is
-    * order-independent and the oracle replays it with its portable
-    * macro equivalents.
-    */
-  private def q172(s: SparkSession, dir: String): DataFrame = {
-    T(s, dir, "documents").createOrReplaceTempView("documents_v")
-    T(s, dir, "embeddings").createOrReplaceTempView("embeddings_v")
-    s.sql("""
-      WITH q AS (SELECT embedding AS qv FROM embeddings_v WHERE vec_id = 0),
-      t AS (SELECT lang, count(*) AS n, sum(CASE WHEN xs_hash(text) % 2 = 0 THEN 1 ELSE 0 END) AS even_hash
-            FROM documents_v GROUP BY lang),
-      v AS (SELECT label, count(*) AS n,
-              CAST(sum(CAST(round(vec_cosine(embedding, qv), 6) AS DECIMAL(18,6))) AS DOUBLE) AS cos_sum
-            FROM embeddings_v, q GROUP BY label)
-      SELECT 'lang_hash' AS part, lang AS key, n, CAST(even_hash AS DOUBLE) AS metric FROM t
-      UNION ALL
-      SELECT 'label_cos', CAST(label AS STRING), n, cos_sum FROM v
-      ORDER BY part, key""")
-  }
-
-  /** Spark 4 VARIANT ingestion: the semi-structured `props` payload
-    * parsed ONCE into the binary variant encoding (`parse_json`), fields
-    * then extracted with `variant_get` — the modern engine path for
-    * schema-flexible JSON at scale (one parse, typed columnar access,
-    * no per-field regex re-scan like q01's legacy extraction).
-    */
-  private def q173(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
-      .select(col("event_type"),
-        expr("variant_get(parse_json(props), '$.k', 'int')").as("k"))
-      .groupBy(col("event_type"), (col("k") % 10).as("k_mod"))
-      .agg(count(lit(1)).as("n"), sum(col("k").cast("long")).as("k_sum"))
-      .orderBy(col("event_type"), col("k_mod"))
-
-  /** Referential pseudonymization for training-data privacy: user ids
-    * replaced by a salted-hash pseudonym IDENTICALLY across fact and
-    * dimension tables, so joins still line up but raw ids never leave
-    * the pipeline. The salt is a pipeline parameter; rotating it
-    * re-keys every pseudonym consistently.
-    */
-  private def q174(s: SparkSession, dir: String): DataFrame = {
-    val salt = "graft-r4"
-    def pseud(c: Column): Column =
-      substring(md5(concat(lit(salt), lit(":"), c.cast("string")).cast("binary")), 1, 16)
-    val ev = T(s, dir, "events")
-      .select(pseud(col("user_id")).as("pid"), col("value"))
-    val cust = T(s, dir, "customer")
-      .select(pseud(col("c_custkey")).as("pid"), col("c_mktsegment"))
-    ev.join(cust, Seq("pid"))
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n"), count_distinct(col("pid")).as("n_users"),
-        sumx(col("value")).as("total_value"))
-      .orderBy(col("c_mktsegment"))
-  }
-
-  /** Grid-bucketed nearest-station spatial join
-    * ([[graft.operators.Spatial.nearestWithin]]): customers as points,
-    * suppliers as stations, a 5°-radius search — the reference domain's
-    * (weather by city coordinate) canonical lookup, as a cell equi-join
-    * rather than a distance cross join. Coordinates are derived from the
-    * keys in exact integer micro-degrees so the oracle replays them
-    * verbatim.
-    */
-  private def q175(s: SparkSession, dir: String): DataFrame = {
-    def latU(k: Column) = pmod(k * 48271L, lit(120000001L)) - 60000000L
-    def lonU(k: Column) = pmod(k * 69621L, lit(360000001L)) - 180000000L
-    val pts = T(s, dir, "customer").select(col("c_custkey"),
-      latU(col("c_custkey")).as("lat_u"), lonU(col("c_custkey")).as("lon_u"))
-    val st = T(s, dir, "supplier").select(col("s_suppkey"),
-      latU(col("s_suppkey") * 7919L).as("lat_u"),
-      lonU(col("s_suppkey") * 7919L).as("lon_u"))
-    graft.operators.Spatial.nearestWithin(
-      pts, st, "c_custkey", "s_suppkey", "lat_u", "lon_u", 5000000L)
-      .orderBy(col("c_custkey"))
-  }
-
-  /** Character-entropy quality scoring
-    * ([[graft.operators.TextPipeline.charEntropy]]): the cheap
-    * gibberish/boilerplate gate in pretraining filters, flagged at a 3.5
-    * bit threshold.
-    */
-  private def q176(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.charEntropy(T(s, dir, "documents"), "doc_id", "text")
-      .withColumn("quality",
-        when(col("entropy") >= 3.5, lit("ok")).otherwise(lit("low")))
-      .orderBy(col("doc_id"))
-
-  /** Mergeable EXACT distinct counting via packed bitmaps
-    * ([[graft.operators.Sketches.bitmapWords]]): per-half bitmap word
-    * tables built independently (the persisted-store shape), OR-merged,
-    * popcounted — the merged exact count must equal a direct
-    * count(DISTINCT), which is precisely what the oracle checks.
-    */
-  private def q177(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .select(col("event_id"), col("event_type"), col("user_id"))
-    val halves = Seq(0, 1).map(p =>
-      graft.operators.Sketches.bitmapWords(
-        ev.filter(col("event_id") % 2 === p), Seq("event_type"), "user_id"))
-    graft.operators.Sketches.bitmapDistinct(
-      halves.reduce(_ unionByName _), Seq("event_type"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Time-decayed engagement scoring: per-type value sums halved per week
-    * of age — the feature-store freshness weighting. The decay factor is
-    * an exact power of two (weekly buckets, `1 / 2^age_weeks`), so every
-    * per-row product is IEEE-identical cross-engine before the usual
-    * round-then-decimal accumulation.
-    */
-  private def q178(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .select(col("event_type"), col("value"), to_date(evTs).as("d"))
-    val mx = ev.agg(max(col("d")).as("mx"))
-    ev.join(broadcast(mx))
-      .withColumn("wk", expr("datediff(mx, d) div 7"))
-      .withColumn("contrib",
-        round(col("value") / expr("cast(shiftleft(1L, int(wk)) as double)"), 9)
-          .cast(DecimalType(28, 9)))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("contrib")).cast("double").as("decayed_value"),
-        sumx(col("value")).as("raw_value"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Content-defined chunking ([[graft.operators.Dedup.contentChunks]]):
-    * Rabin-style cut points on the portable hash, then a corpus-wide
-    * shared-chunk profile per document — the boilerplate/quote detector
-    * fixed-width chunking cannot express. Every cut position is replayed
-    * bit-for-bit by the oracle.
-    */
-  private def q179(s: SparkSession, dir: String): DataFrame = {
-    val ch = Dedup.contentChunks(T(s, dir, "documents"), "doc_id", "text")
-      .localCheckpoint(true) // feeds both the share map and the per-doc rollup
-    val shared = ch.groupBy(col("chunk_hash"))
-      .agg(count_distinct(col("doc_id")).as("nd"))
-    ch.join(shared, Seq("chunk_hash"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_chunks"),
-        sum(col("chunk_len")).as("total_len"),
-        sum(when(col("nd") >= 2, 1L).otherwise(0L)).as("n_shared_chunks"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Checkpointed AvailableNow resume
-    * ([[graft.streaming.StreamVerify.incrementalResume]]): two batch-cadence
-    * runs over an arriving-file source, second run resumes the checkpoint
-    * and must process ONLY the new file — re-reads or drops corrupt the
-    * oracle hash by construction.
-    */
-  private def q180(s: SparkSession, dir: String): DataFrame = {
-    val staged = q135Events(s, dir)
-    graft.streaming.StreamVerify.incrementalResume(
-      s, s"$staged/a_even.parquet", s"$staged/b_odd.parquet",
-      scratch(dir, "q180"))
-      .orderBy(col("date_id"))
-  }
-
-  /** Nation → IANA zone for q181. Zones chosen for rule stability (no
-    * 2019+ tzdata churn, so the JDK and ICU databases agree) and coverage
-    * of the awkward cases: half-hour offset (Kolkata), southern-hemisphere
-    * January DST (São Paulo pre-2019 had it — now fixed offset), date-line
-    * adjacent (Tokyo). Unmapped nations observe UTC.
-    */
-  private val NationTz = Seq(
-    "UNITED STATES" -> "America/New_York",
-    "BRAZIL" -> "America/Sao_Paulo",
-    "FRANCE" -> "Europe/Paris",
-    "GERMANY" -> "Europe/Berlin",
-    "UNITED KINGDOM" -> "Europe/London",
-    "JAPAN" -> "Asia/Tokyo",
-    "CHINA" -> "Asia/Shanghai",
-    "INDIA" -> "Asia/Kolkata")
-
-  /** Timezone-aware event-time normalization: the same UTC instant lands
-    * on DIFFERENT local calendar days per user region — every "daily
-    * active" metric over a global user base needs this conversion, and
-    * naive UTC bucketing miscounts it. Events are converted to each
-    * customer-nation's IANA zone before local-day aggregation; both
-    * engines resolve the zone rules from their own tz database (stable
-    * zones, so they agree).
-    */
-  private def q181(s: SparkSession, dir: String): DataFrame = {
-    val tzCol = NationTz.foldRight(lit("UTC")) { case ((n, z), acc) =>
-      when(col("n_name") === n, lit(z)).otherwise(acc)
-    }
-    val cust = T(s, dir, "customer").select(col("c_custkey"), col("c_nationkey"))
-      .join(broadcast(T(s, dir, "nation")
-        .select(col("n_nationkey"), col("n_name"))),
-        col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"), col("n_name"))
-    T(s, dir, "events")
-      .select(col("user_id"), col("value"), timestamp_seconds(evSec).as("uts"))
-      .join(cust, col("user_id") === col("c_custkey"))
-      .withColumn("local_date",
-        date_format(from_utc_timestamp(col("uts"), tzCol), "yyyy-MM-dd"))
-      .groupBy(col("n_name"), col("local_date"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("total_value"))
-      .orderBy(col("n_name"), col("local_date"))
-  }
-
-  /** Multi-column log-based data skipping ([[TxLake.readPrunedBy]]): the
-    * table is laid out as a (custkey-range × orderkey-range) grid of
-    * files, each commit logging NAMED per-file min/max for both columns;
-    * a conjunctive two-column predicate then opens only the files whose
-    * stats intersect BOTH ranges (TxLakeSpec asserts the exact file
-    * count). One-column stats (q125) can't skip on the second predicate —
-    * this is the Delta/Iceberg multi-column skipping surface.
-    */
-  private def q182(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q182")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val o = T(s, dir, "orders").select(
-      col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-      col("o_orderstatus"))
-    val r = o.agg(max(col("o_custkey")), max(col("o_orderkey"))).head()
-    val (cm, om) = (r.getLong(0), r.getLong(1))
-    val (ct, ot) = (cm / 2, om / 2)
-    for {
-      ci <- 0 to 1
-      oi <- 0 to 1
-    } TxLake.commit(s, lake,
-      o.filter((if (ci == 0) col("o_custkey") <= ct else col("o_custkey") > ct) &&
-        (if (oi == 0) col("o_orderkey") <= ot else col("o_orderkey") > ot))
-        .coalesce(1),
-      statsCols = Seq("o_custkey", "o_orderkey"))
-    TxLake.readPrunedBy(s, lake,
-      Seq(("o_custkey", 1L, ct), ("o_orderkey", 1L, ot)))
-      .filter(col("o_custkey").between(1L, ct) &&
-        col("o_orderkey").between(1L, ot)) // exact filter atop the pruning
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"), sumx(col("o_totalprice")).as("total_price"))
-      .orderBy(col("o_orderstatus"))
-  }
-
-  /** Entity resolution end to end — the MDM golden-record pipeline: two
-    * record systems (clean, trust 2 / name-corrupted with nulls, trust 1)
-    * → blocked fuzzy linkage (q143's codegen Jaro-Winkler) → connected
-    * components → per-FIELD survivorship
-    * ([[graft.operators.Linkage.goldenRecord]]). The trusted system is
-    * missing every 10th balance while the dirty system is missing every
-    * segment, so those golden records provably MIX fields from different
-    * source rows (trusted name + untrusted balance) — the property that
-    * distinguishes per-field survivorship from keep-best-record (q155).
-    */
-  private def q183(s: SparkSession, dir: String): DataFrame = {
-    val cust = T(s, dir, "customer")
-    def dirtyName = concat(
-      expr("substring(c_name, 1, length(c_name) - 2)"),
-      expr("substring(c_name, length(c_name), 1)"),
-      expr("substring(c_name, length(c_name) - 1, 1)"))
-    val sysA = cust.select((col("c_custkey") * 2).as("rid"),
-      lit(2L).as("trust"), col("c_name").as("name"),
-      when(col("c_custkey") % 10 === 0, lit(null))
-        .otherwise(col("c_acctbal")).cast(DecimalType(12, 2)).as("acctbal"),
-      col("c_mktsegment").as("segment"))
-    val sysB = cust.select((col("c_custkey") * 2 + 1).as("rid"),
-      lit(1L).as("trust"), dirtyName.as("name"),
-      (col("c_acctbal").cast(DecimalType(12, 2)) + lit(10).cast(DecimalType(12, 2)))
-        .as("acctbal"),
-      lit(null).cast("string").as("segment"))
-    val recs = sysA.unionByName(sysB)
-    val pairs = graft.operators.Linkage.fuzzyJoin(
-      cust, cust.select(col("c_custkey"), dirtyName.as("c_name")),
-      "c_custkey", "c_name", expr("substring(c_name, 10, 7)"), threshold = 0.98)
-      .select((col("a_key") * 2).as("id_a"), (col("b_key") * 2 + 1).as("id_b"))
-    val clusters = Dedup.dupClusters(recs, "rid", pairs)
-    graft.operators.Linkage.goldenRecord(
-      recs.join(clusters, "rid"), "cluster_rep", "rid", "trust",
-      Seq("name", "acctbal", "segment"))
-      .select(col("cluster_rep"), col("n_records"), col("name"),
-        col("acctbal").cast("double").as("acctbal"), col("segment"))
-      .orderBy(col("cluster_rep"))
-  }
-
-  /** OPTIMIZE + Z-ORDER through the log ([[TxLake.optimizeZorder]]): the
-    * table starts as hash-scattered commits (every file spans both key
-    * ranges — nothing skippable), one atomic optimize rewrites it
-    * z-clustered with named two-column stats, and the same conjunctive
-    * predicate then opens a fraction of the files (TxLakeSpec asserts the
-    * before/after counts). The result equals the plain filter — layout
-    * work must never change answers.
-    */
-  private def q184(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q184")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val o = T(s, dir, "orders").select(
-      col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-      col("o_orderstatus"))
-    (0 to 3).foreach(i => TxLake.commit(s, lake,
-      o.filter(pmod(col("o_orderkey"), lit(4)) === i).coalesce(1),
-      statsCols = Seq("o_custkey", "o_orderkey")))
-    TxLake.optimizeZorder(s, lake, Seq("o_custkey", "o_orderkey"))
-    val r = o.agg(max(col("o_custkey")), max(col("o_orderkey"))).head()
-    val (ct, ot) = (r.getLong(0) / 8, r.getLong(1) / 8)
-    TxLake.readPrunedBy(s, lake,
-      Seq(("o_custkey", 1L, ct), ("o_orderkey", 1L, ot)))
-      .filter(col("o_custkey").between(1L, ct) &&
-        col("o_orderkey").between(1L, ot))
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"), sumx(col("o_totalprice")).as("total_price"))
-      .orderBy(col("o_orderstatus"))
-  }
-
-  /** Streaming sketch-store maintenance
-    * ([[graft.streaming.StreamVerify.cmsMaintenance]]): micro-batches land
-    * their Count-Min cell increments as exactly-once tagged lake commits;
-    * the standing store is merge-on-read. Addition commutes, so the final
-    * top-k probe is independent of batch boundaries and replays as the
-    * whole-corpus sketch in the oracle.
-    */
-  private def q185(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.cmsMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q185"))
-
-  /** Streaming sliding bitmap-store maintenance
-    * ([[graft.streaming.StreamVerify.bitmapMaintenance]]): the stream is
-    * split into micro-batches, each landing its hourly bitmap cells as
-    * an exactly-once tagged commit; the merged store answers q189's
-    * trailing-6h distinct dashboard — same oracle, fed by the stream.
-    */
-  private def q200(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.bitmapMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q200"))
-
-  /** Persisted PQ index ([[Similarity.buildPqIndex]] /
-    * [[Similarity.queryPqIndex]]): codebook + 2-byte codes stored (the
-    * compressed form — never reconstructions), queries re-derive
-    * reconstructions from the broadcast codebook. Bit-equal to the
-    * build-and-query path, so it shares q188's oracle verbatim (the
-    * q150 contract for PQ).
-    */
-  private def q207(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    val idx = scratch(dir, "q207_idx")
-    graft.sources.LocalFs.deleteRecursively(idx)
-    Similarity.buildPqIndex(emb, "vec_id", "embedding", 64, idx)
-    Similarity.queryPqIndex(s, idx, emb.filter(col("vec_id") < 10),
-      "vec_id", "embedding")
-  }
-
-  /** Incremental PQ-index maintenance ([[Similarity.appendToPqIndex]]):
-    * codebooks train on the BASE corpus only (vec_id % 5 ≠ 0); the
-    * held-out batch appends by encoding against those existing
-    * codebooks — no re-training per ingest (q167's contract for PQ).
-    * The oracle replays the base-trained k-means with code assignment
-    * over ALL vectors.
-    */
-  private def q208(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    val idx = scratch(dir, "q208_idx")
-    graft.sources.LocalFs.deleteRecursively(idx)
-    Similarity.buildPqIndex(
-      emb.filter(col("vec_id") % 5 =!= 0), "vec_id", "embedding", 64, idx)
-    Similarity.appendToPqIndex(s, idx,
-      emb.filter(col("vec_id") % 5 === 0), "vec_id", "embedding", 64)
-    Similarity.queryPqIndex(s, idx, emb.filter(col("vec_id") < 10),
-      "vec_id", "embedding")
-  }
-
-  /** Exact set-similarity join ([[Dedup.setSimilarityJoin]]): EVERY pair
-    * with word-set Jaccard ≥ 0.9, found through lossless rare-first
-    * prefix filtering (the PPJoin idea) — the exact-recall counterpart
-    * to the minhash family. The oracle brute-forces ALL pairs, so the
-    * gate proves the filter misses nothing.
-    */
-  private def q210(s: SparkSession, dir: String): DataFrame =
-    // the id bound caps the quadratic ANSWER on this dup-dense synthetic
-    // corpus (every templated doc matches hundreds of near-copies at
-    // J≥0.9; an exact join's cost is lower-bounded by its output) — the
-    // filter is a no-op at the sf0.01 gate (500 docs) and keeps the
-    // sf0.1 bench measuring operator overhead, not answer volume
-    graft.operators.Dedup.setSimilarityJoin(
-      T(s, dir, "documents").filter(col("doc_id") < 500), "doc_id", "text", 0.9)
-
-  /** HYBRID retrieval with reciprocal-rank fusion: a lexical list (term
-    * frequency of doc 0's leading word) and a vector list (cosine to
-    * vec 0) are each pruned to their top-100 by TakeOrdered (orderBy +
-    * limit — no full sort at scale; production fuses bounded candidate
-    * lists, never corpora), then fused by RRF: Σ 1/(60 + rank), the
-    * standard k=60 formula, each term on the 9-grid. The union-join
-    * keeps single-list docs (the whole point of RRF — a doc missing
-    * from one list still places).
-    */
-  private def q209(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
-    val emb = T(s, dir, "embeddings")
-    val term = docs.filter(col("doc_id") === 0)
-      .select(TF.words(col("text")).getItem(0)).head().getString(0)
-    val wl = Window.orderBy(col("tf").desc, col("doc_id"))
-    val lex = docs
-      .select(col("doc_id"),
-        size(filter(TF.words(col("text")), w => w === lit(term)))
-          .cast("long").as("tf"))
-      .filter(col("tf") > 0)
-      .orderBy(col("tf").desc, col("doc_id")).limit(100)
-      .withColumn("rl", row_number().over(wl))
-    val qv = emb.filter(col("vec_id") === 0)
-      .select(col("embedding").as("qv"))
-    val wv = Window.orderBy(col("cos_r").desc, col("doc_id"))
-    val vec = emb.join(broadcast(qv))
-      .select(col("vec_id").as("doc_id"),
-        round(VF.cosine(col("embedding"), col("qv")), 4).as("cos_r"))
-      .orderBy(col("cos_r").desc, col("doc_id")).limit(100)
-      .withColumn("rv", row_number().over(wv))
-    lex.select(col("doc_id"), col("rl"))
-      .join(vec.select(col("doc_id"), col("rv")), Seq("doc_id"), "full_outer")
-      .select(col("doc_id"),
-        (coalesce(round(lit(1.0) / (lit(60) + col("rl")), 9), lit(0.0)) +
-          coalesce(round(lit(1.0) / (lit(60) + col("rv")), 9), lit(0.0)))
-          .as("rrf"))
-      .orderBy(col("rrf").desc, col("doc_id")).limit(20)
-  }
-
-  /** Streaming erasure via deletion vectors
-    * ([[graft.streaming.StreamVerify.dvErasureStream]]): a delete-request
-    * stream lands per-micro-batch DV commits against a standing table —
-    * zero data-file writes (asserted in-gate), naturally idempotent
-    * under redelivery.
-    */
-  private def q206(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.dvErasureStream(
-      s, q135Events(s, dir), scratch(dir, "q206"),
-      T(s, dir, "customer")
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"),
-          col("c_mktsegment")))
-
-  /** Catalog-level multi-table transaction
-    * ([[graft.sources.TxCatalog]]): a fact rollup and its per-segment
-    * summary land in ONE atomic commit, then a second transaction
-    * replaces both — readers joining the two member tables at the same
-    * version can never see the fact/rollup drift two single-table
-    * commits would expose (crash-between-tables invisibility is
-    * spec-proved). The oracle recomputes both tables directly.
-    */
-  private def q186(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxCatalog
-    val root = scratch(dir, "q186")
-    graft.sources.LocalFs.deleteRecursively(root)
-    val o = T(s, dir, "orders")
-    val cust = T(s, dir, "customer")
-    def custAgg(f: DataFrame) = f
-      .groupBy(col("o_custkey")).agg(
-        count(lit(1)).as("n_orders"),
-        sum(col("o_totalprice").cast(DecimalType(18, 2))).as("spend"))
-    def segAgg(byCust: DataFrame) = byCust
-      .join(cust.select(col("c_custkey"), col("c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment")).agg(
-        sum(col("n_orders")).as("n_orders"), sum(col("spend")).as("spend"))
-    // txn 1: a partial day's facts + its rollup, atomically
-    val part = o.filter(col("o_orderkey") % 3 === 0)
-    val byCust1 = custAgg(part).localCheckpoint(true)
-    TxCatalog.commit(s, root,
-      Seq("cust_orders" -> byCust1, "segment_rollup" -> segAgg(byCust1)))
-    // txn 2: the full refresh REPLACES both members in one transaction
-    val byCust2 = custAgg(o).localCheckpoint(true)
-    TxCatalog.commit(s, root,
-      Seq("cust_orders" -> byCust2, "segment_rollup" -> segAgg(byCust2)),
-      overwrite = true)
-    val fact = TxCatalog.readSnapshot(s, root, "cust_orders")
-      .join(cust.select(col("c_custkey"), col("c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_cust"),
-        sum(col("spend")).cast("double").as("fact_spend"))
-    val roll = TxCatalog.readSnapshot(s, root, "segment_rollup")
-      .select(col("c_mktsegment"), col("n_orders"),
-        col("spend").cast("double").as("rollup_spend"))
-    // the join consistency IS the point: fact-side recompute must equal
-    // the co-committed rollup in every segment
-    fact.join(roll, Seq("c_mktsegment"))
-      .orderBy(col("c_mktsegment"))
-  }
-
-  /** Schema evolution through the transaction log ([[TxLake.addColumn]] /
-    * [[TxLake.renameColumn]]): three waves land under three successive
-    * schemas — original, +src column, value→amount rename — with ZERO
-    * data rewrite; the snapshot read surfaces typed NULLs for
-    * pre-evolution rows and maps the renamed column across old and new
-    * files (time travel to the old schema spec-proved).
-    */
-  private def q187(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q187")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val ev = T(s, dir, "events").select(col("event_id"),
-      col("value").cast(DecimalType(18, 2)).as("value"))
-    TxLake.commit(s, lake, ev.filter(col("event_id") % 3 === 0).coalesce(1))
-    TxLake.addColumn(lake, "src", "string")
-    TxLake.commit(s, lake, ev.filter(col("event_id") % 3 === 1)
-      .withColumn("src", lit("wave2")).coalesce(1))
-    TxLake.renameColumn(lake, "value", "amount")
-    TxLake.commit(s, lake, ev.filter(col("event_id") % 3 === 2)
-      .select(col("event_id"), col("value").as("amount"))
-      .withColumn("src", lit("wave3")).coalesce(1))
-    TxLake.readSnapshot(s, lake)
-      .groupBy(coalesce(col("src"), lit("legacy")).as("src"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("amount")).cast("double").as("total_amount"))
-      .orderBy(col("src"))
-  }
-
-  /** Product-quantization ANN ([[Similarity.annPq]]): 4 subspaces × 16
-    * dims, 16-codeword L2 codebooks per subspace (2-byte codes — 128×
-    * compression vs raw floats), asymmetric reconstruction scoring. The
-    * oracle replays all four independent k-means runs (init + 2 Lloyd
-    * iterations in exact slice arithmetic), the code assignment, and the
-    * concatenated reconstruction bit-for-bit.
-    */
-  private def q188(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    Similarity.annPq(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", 64)
-  }
-
-  /** Sliding-window distinct users per (event_type, hour) from a
-    * standing per-hour bitmap store
-    * ([[graft.operators.Sketches.trailingBitmapDistinct]]): facts are
-    * scanned once into hourly bitmap cells, and the trailing-6h merge
-    * runs over cells only — the dashboard counterpart of q99's
-    * fact-explode, and the sliding variant of q177's mergeable bitmaps.
-    */
-  private def q189(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(
-      col("event_type"), col("user_id"),
-      expr("(ts div 1000000000) div 3600").as("hour_id"))
-    val cells = graft.operators.Sketches.bitmapWords(
-      ev, Seq("event_type", "hour_id"), "user_id")
-    graft.operators.Sketches.trailingBitmapDistinct(
-      cells, Seq("event_type"), "hour_id", 6)
-      .orderBy(col("event_type"), col("hour_id"))
-  }
-
-  /** Multi-source BFS hop distance ([[graft.operators.Graph.bfsHops]])
-    * over the customer–supplier bipartite graph (suppliers as negative
-    * node ids, both edge directions): how many trade hops from nation 0's
-    * customers to everyone else, capped at 4. Oracle = recursive CTE with
-    * MIN(depth) — first-discovery order in the frontier expansion must
-    * equal the minimum over all enumerated paths.
-    */
-  private def q190(s: SparkSession, dir: String): DataFrame = {
-    val pairs = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      .join(T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .distinct()
-    val edges = pairs.select(col("cust").as("src"), (-col("supp")).as("dst"))
-      .unionByName(pairs.select((-col("supp")).as("src"), col("cust").as("dst")))
-    val sources = T(s, dir, "customer").filter(col("c_nationkey") === 0)
-      .select(col("c_custkey").as("node"))
-    graft.operators.Graph.bfsHops(edges, sources, maxHops = 4)
-      .orderBy(col("node"))
-  }
-
-  /** Time-series LINEAR interpolation over per-user hourly gaps — the
-    * numeric counterpart of q65's forward fill: interior missing hours
-    * get `prev + (next - prev) * elapsed-fraction`, observed hours pass
-    * through. Spine construction bounds the series to each user's own
-    * [first, last] hour, so no leading/trailing extrapolation exists by
-    * construction. One explode + two per-key window passes.
-    */
-  private def q191(s: SparkSession, dir: String): DataFrame = {
-    // interval-explode formulation (the q65/q286 rewrite): an interior
-    // missing hour's bracketing observations are its interval's head and
-    // the head's lead(), so interpolation needs ONE ascending window over
-    // the census — no bounds aggregate, no spine⋈census join, no second
-    // (descending) spine sort. Spine coverage is identical: intervals
-    // tile [first, last] per user by construction.
-    val hourly = T(s, dir, "events")
-      .groupBy(col("user_id"), expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg(sumx(col("value")).as("hsum"), count(lit(1)).as("hn"))
-      .select(col("user_id"), col("hid"), (col("hsum") / col("hn")).as("hv"))
-    val wLead = Window.partitionBy(col("user_id")).orderBy(col("hid"))
-    hourly
-      .withColumn("__nh", lead(col("hid"), 1).over(wLead))
-      .withColumn("__nv", lead(col("hv"), 1).over(wLead))
-      .select(col("user_id"), col("hv"), col("__nh"), col("__nv"),
-        col("hid").as("__h"),
-        explode(sequence(col("hid"),
-          coalesce(col("__nh") - 1L, col("hid")))).as("hid"))
-      .select(col("user_id"), col("hid"),
-        (col("hid") === col("__h")).as("observed"),
-        // UNROUNDED on purpose: every input is decimal-exact or integral,
-        // and both engines evaluate pv + (nv-pv) * ((hid-ph)/(nh-ph)) in
-        // the same IEEE op order — the doubles are bit-identical. A final
-        // round(·, 6) would REINTRODUCE divergence: interpolation at
-        // frac=1/2 of 2-decimal rationals lands exactly on .5×1e-6
-        // boundaries, where Spark's decimal-string HALF_UP and DuckDB's
-        // numeric rounding disagree (seen live at sf0.001 row 7300).
-        when(col("hid") === col("__h"), col("hv"))
-          .otherwise(col("hv") + (col("__nv") - col("hv")) *
-            ((col("hid") - col("__h")) / (col("__nh") - col("__h"))))
-          .as("v_interp"))
-      .orderBy(col("user_id"), col("hid"))
-  }
-
-  /** Deletion-vector DELETE ([[TxLake.deleteWhereDv]]): merge-on-read
-    * row deletion — matching positions land in a sidecar, NO data file
-    * is rewritten (asserted in-gate: the DV commit creates no data
-    * directory), reads apply the mask, time travel to the pre-delete
-    * version still sees every row. The O(matches) alternative to q120's
-    * copy-on-write erasure.
-    */
-  private def q192(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q192")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val o = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
-      col("o_orderstatus"), col("o_totalprice"))
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 3 === 0).coalesce(2))
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 3 =!= 0).coalesce(2))
-    TxLake.deleteWhereDv(s, lake,
-      col("o_orderstatus") === "F" && col("o_totalprice") > lit(150000.0))
-    require(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$lake/data/v3")),
-      "a DV delete must not write data files")
-    def agg(df: DataFrame, tag: String): DataFrame = df
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"), sumx(col("o_totalprice")).as("total"))
-      .withColumn("snap", lit(tag))
-    agg(TxLake.readSnapshot(s, lake, 2L), "before_dv")
-      .unionByName(agg(TxLake.readSnapshot(s, lake), "after_dv"))
-      .orderBy(col("snap"), col("o_orderstatus"))
-  }
-
-  /** Metadata-only aggregates from the transaction log
-    * ([[TxLake.countRows]] / [[TxLake.commitAddCounts]]): per-file row
-    * counts are logged at commit time (the Delta numRecords posture), so
-    * COUNT(*)-class questions are O(#files) log arithmetic — no data file
-    * is opened (TxLakeSpec proves it by physically hiding the data
-    * directory). Five tagged commits (one per order priority) land the
-    * table; every answer row then comes from the LOG ALONE: per-commit
-    * counts by tag, plus the table total after a deletion-vector erasure
-    * whose O(matches) sidecar is the only data read. At 100 TB this is
-    * the difference between a dashboard COUNT costing a log parse and
-    * costing a table scan.
-    */
-  private def q212(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q212")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val o = T(s, dir, "orders").select(
-      col("o_orderkey"), col("o_orderpriority"), col("o_totalprice"))
-    val prios = Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-    prios.foreach { p =>
-      TxLake.commit(s, lake,
-        o.filter(col("o_orderpriority") === p).coalesce(2), tag = s"prio:$p")
-    }
-    TxLake.deleteWhereDv(s, lake, col("o_totalprice") > lit(250000.0))
-    val perCommit = TxLake.commitAddCounts(lake)
-      .collect { case (_, t, n) if t.nonEmpty =>
-        ("commit:" + t.stripPrefix("prio:"), n) }
-    val total = TxLake.countRows(s, lake)
-      .getOrElse(sys.error("every file carries a logged count"))
-    import s.implicits._
-    (perCommit :+ (("total_after_erasure", total)))
-      .toDF("slice", "n").orderBy(col("slice"))
-  }
-
-  /** Zero-copy RESTORE ([[TxLake.restore]]): a bad load (negated prices)
-    * lands as v4; RESTORE TO v2 rolls the table back in one log-only
-    * commit — no data movement (TxLakeSpec proves byte-stillness), the
-    * rolled-back span stays time-travelable, and a copy-on-write DELETE
-    * between the restore point and the bad load is correctly undone too.
-    * The gate reads BOTH the restored head and the pre-restore v4 state,
-    * proving history survives the rollback.
-    */
-  private def q213(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q213")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val o = T(s, dir, "orders").select(
-      col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 3 === 0).coalesce(2))
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 3 === 1).coalesce(2))
-    TxLake.deleteWhere(s, lake, col("o_totalprice") > lit(200000.0))
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 3 === 2)
-      .withColumn("o_totalprice", -col("o_totalprice")).coalesce(2))
-    TxLake.restore(lake, 2L)
-    def agg(df: DataFrame, tag: String): DataFrame = df
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"), sumx(col("o_totalprice")).as("total"))
-      .withColumn("snap", lit(tag))
-    agg(TxLake.readSnapshot(s, lake), "restored_head")
-      .unionByName(agg(TxLake.readSnapshot(s, lake, 4L), "pre_restore_v4"))
-      .orderBy(col("snap"), col("o_orderstatus"))
-  }
-
-  /** Per-file BLOOM index ([[TxLake.buildBloomIndex]]): the third
-    * skipping layer beside range stats and the exact key index, sized
-    * O(#files × bits/64) instead of O(distinct keys). The table is
-    * deliberately hash-SCATTERED (round-robin splits, so every file's
-    * [min,max] spans the whole key range and min/max stats prune
-    * nothing); the bloom still routes each point lookup to the files
-    * that can contain it — the gate requires real pruning happened —
-    * and the exact filter on top removes any false positive, so the
-    * result is exact regardless.
-    */
-  private def q214(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q214")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val idx = s"$lake-idx"
-    graft.sources.LocalFs.deleteRecursively(idx)
-    val o = T(s, dir, "orders").select(
-      col("o_orderkey"), col("o_custkey"), col("o_orderstatus"), col("o_totalprice"))
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 2 === 0).repartition(3))
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 2 === 1).repartition(3))
-    TxLake.buildBloomIndex(s, lake, "o_orderkey", idx)
-    val keys = o.orderBy(col("o_orderkey").desc).limit(3)
-      .select(col("o_orderkey"))
-    val cand = TxLake.filesForKeysBloom(s, lake, idx, keys)
-    val totalFiles = TxLake.fileRowCounts(lake).size
-    require(cand.size < totalFiles,
-      s"bloom must prune: $cand of $totalFiles files")
-    TxLake.readByKeysBloom(s, lake, idx, keys)
-      .join(broadcast(keys), Seq("o_orderkey"), "left_semi")
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** ANN recall evaluation ([[Similarity.annRecall]]): LSH top-10 scored
-    * against the brute-force exact top-10 — the measurement that decides
-    * whether an index configuration's speed/recall trade is shippable.
-    * The oracle replays BOTH retrievals (plane-literal LSH bands + exact
-    * ranking) and the per-query overlap, so the recall numbers themselves
-    * are hash-exact.
-    */
-  private def q215(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    val q = emb.filter(col("vec_id") < 10)
-    Similarity.annRecall(
-      Similarity.annLsh(emb, q, "vec_id", "embedding", 64, 10),
-      Similarity.knnBrute(emb, q, "vec_id", "embedding", 10))
-      .orderBy(col("qid"))
-  }
-
-  /** Incremental connected components ([[Dedup.updateClusters]]): the
-    * standing cluster assignment (built from the base half of the
-    * edit-distance pair graph) absorbs the delta edges through a
-    * CONTRACTED root graph sized by the batch's touched clusters — the
-    * historical edges are never re-propagated. The oracle is the FULL
-    * recompute (q59's recursive CTE verbatim), so the gate proves
-    * incremental == from-scratch.
-    */
-  private def q216(s: SparkSession, dir: String): DataFrame = {
-    val pairs = q49(s, dir)
-      .select(col("w_a").as("id_a"), col("w_b").as("id_b"))
-      .localCheckpoint(true)
-    val isBase = col("id_a") < lit("m") && col("id_b") < lit("m")
-    val base = pairs.filter(isBase)
-    val delta = pairs.filter(!isBase)
-    val baseNodes = base.select(col("id_a").as("w"))
-      .unionAll(base.select(col("id_b").as("w"))).distinct()
-    val comp = Dedup.dupClusters(baseNodes, "w", base, maxIter = 30)
-    Dedup.updateClusters(
-      comp.select(col("w").as("node"), col("cluster_rep")), delta, maxIter = 30)
-      .select(col("node").as("w"), col("cluster_rep"))
-      .orderBy(col("w"))
-  }
-
-  /** K-anonymity suppression ([[Quality.kAnonymize]]): customers whose
-    * (nation, segment) equivalence class has fewer than k=5 members get
-    * the quasi identifiers cell-suppressed to `*` before release — no
-    * published combination isolates fewer than 5 people. Class sizes come
-    * from one metadata-sized aggregation broadcast back over the rows;
-    * the aggregate view groups the released table for the oracle.
-    */
-  private def q217(s: SparkSession, dir: String): DataFrame =
-    Quality.kAnonymize(
-      T(s, dir, "customer").select(
-        col("c_custkey"), col("c_nationkey"), col("c_mktsegment"), col("c_acctbal")),
-      Seq("c_nationkey", "c_mktsegment"), k = 5)
-      .groupBy(col("c_nationkey_anon"), col("c_mktsegment_anon"), col("suppressed"))
-      .agg(count(lit(1)).as("n"), sumx(col("c_acctbal")).as("total_bal"))
-      .orderBy(col("c_nationkey_anon"), col("c_mktsegment_anon"))
-
-  /** Weighted quantiles ([[Relational.weightedPercentiles]]): the price
-    * below which 50% / 90% of shipped QUANTITY falls, per return flag —
-    * quantity-weighted, not row-weighted, the distinction that matters
-    * whenever rows carry unequal mass (token counts, bytes, durations).
-    * The threshold comparison is pure integer arithmetic, so the cut is
-    * engine-exact.
-    */
-  private def q218(s: SparkSession, dir: String): DataFrame =
-    Relational.weightedPercentiles(
-      T(s, dir, "lineitem"), "l_returnflag", "l_extendedprice", "l_quantity",
-      "l_orderkey", Seq(50, 90))
-      .orderBy(col("l_returnflag"))
-
-  /** STREAMING incremental components
-    * ([[graft.streaming.StreamVerify.componentsMaintenance]]): the
-    * edit-distance pair graph arrives as 3 micro-batches; each folds into
-    * the standing assignment through the contracted root graph and ONLY
-    * the changed rows land, via a tagged exactly-once merge-on-read
-    * upsert (delta appends + deletion-vector masks in one atomic entry —
-    * per-batch commit cost O(batch + touched clusters), never O(state)).
-    * Union-find merging commutes, so the batch-split result equals the
-    * one-shot recompute — the oracle is q59's full recursive CTE, shared
-    * verbatim (the q189/q200 proof pattern applied to graph maintenance).
-    */
-  private def q219(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.componentsMaintenance(
-      s, q49(s, dir).select(col("w_a").as("id_a"), col("w_b").as("id_b")),
-      scratch(dir, "q219"))
-      .select(col("node").as("w"), col("cluster_rep"))
-      .orderBy(col("w"))
-
-  /** Greedy longest-match tokenizer apply
-    * ([[graft.operators.TextPipeline.tokenizeGreedy]]): top-15 corpus
-    * words + the single-character alphabet as the vocabulary, each
-    * distinct word consumed by maximal munch — the corpus-scale
-    * tokenization step, run at vocabulary size and joined back by word.
-    * The oracle unrolls every greedy step as correlated longest-prefix
-    * subqueries, so each token sequence replays exactly.
-    */
-  private def q220(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.tokenizeGreedy(T(s, dir, "documents"), "text")
-      .orderBy(col("w"))
-
-  /** Incremental canonical dedup maintenance ([[Dedup.updateCanonical]]):
-    * the standing corpus state (cluster + keep-best verdicts over the
-    * non-batch docs) absorbs the batch's docs and near-dup pairs; the
-    * keep pick reruns only inside touched clusters. The oracle is q155's
-    * one-shot cluster-and-pick verbatim — incremental == from-scratch.
-    */
-  private def q221(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
-    val pairs = Dedup.minhashNearDupPairs(docs, "doc_id", "text", threshold = 0.3)
-      .select(col("id_a"), col("id_b")).localCheckpoint(true)
-    val isNewA = col("id_a") % 7 === 0
-    val isNewB = col("id_b") % 7 === 0
-    val baseDocs = docs.filter(col("doc_id") % 7 =!= 0)
-    val baseState = Dedup.canonicalPerCluster(
-      baseDocs, "doc_id", pairs.filter(!isNewA && !isNewB), "n_chars")
-      .join(baseDocs.select(col("doc_id"), col("n_chars")), Seq("doc_id"))
-      .select(col("doc_id").as("node"), col("cluster_rep"), col("keep"),
-        col("n_chars").as("weight"))
-    Dedup.updateCanonical(
-      baseState,
-      docs.filter(col("doc_id") % 7 === 0)
-        .select(col("doc_id").as("node"), col("n_chars").as("weight")),
-      pairs.filter(isNewA || isNewB), maxIter = 30)
-      .select(col("node").as("doc_id"), col("cluster_rep"), col("keep"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** First-order Markov transition matrix ([[Trend.markovTransitions]])
-    * over per-user event paths: every consecutive event-type step, counted
-    * corpus-wide, with the exact conditional probability. The |states|²
-    * output is metadata-sized regardless of input scale; p is one
-    * correctly-rounded division of exact integers, engine-identical.
-    */
-  private def q222(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.markovTransitions(
-      T(s, dir, "events"), "user_id", evSec, col("event_id"), "event_type")
-      .orderBy(col("from_state"), col("to_state"))
-
-  /** Dynamic-gap sessionization ([[Relational.dynamicGapSessions]]): a
-    * purchase or signup keeps the session alive for 3600s, anything else
-    * 1800s — per-event gaps, overlapping intervals merged. The running
-    * interval-merge is a single growing-frame window (incremental in
-    * WindowExec), one shuffle on user_id; all bounds integer seconds.
-    */
-  private def q223(s: SparkSession, dir: String): DataFrame =
-    Relational.dynamicGapSessions(
-      T(s, dir, "events"), "user_id", evSec, col("event_id"),
-      when(col("event_type").isin("purchase", "signup"), lit(3600L))
-        .otherwise(lit(1800L)))
-      .orderBy(col("user_id"), col("session_idx"))
-
-  /** k-core decomposition ([[graft.operators.Graph.kCore]]) of the
-    * customer–supplier bipartite graph (suppliers as -(key+1): plain
-    * negation would collide supplier 0 with customer 0 into a dropped
-    * self-loop): the maximal subgraph where every node keeps >= 10
-    * distinct counterparties — the standard densest-region extraction for
-    * entity graphs. Peeling is monotone, so the oracle's fixed 6-round
-    * unroll is exact for any graph that stabilizes within it (this one
-    * takes 2; Spark detects the fixpoint by edge count).
-    */
-  private def q224(s: SparkSession, dir: String): DataFrame = {
-    val pairs = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      .join(T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("src"), (-(col("l_suppkey") + 1)).as("dst"))
-    graft.operators.Graph.kCore(pairs, k = 10)
-      .orderBy(col("node"))
-  }
-
-  /** Deterministic mixture schedule ([[Sampling.mixtureSchedule]]):
-    * language weights en:6 zh:3 de:2 es:2 fr:1 → integer strides over
-    * LCM 6, per-language rank by doc_id, and the first 200 slots of the
-    * resulting total order. The global position is materialized only for
-    * this bounded head (orderBy+limit = distributed TakeOrdered); the
-    * full corpus keeps `vt` as its sort key instead of a serialized
-    * row-number.
-    */
-  private def q225(s: SparkSession, dir: String): DataFrame = {
-    val sched = Sampling.mixtureSchedule(
-      T(s, dir, "documents").select(col("doc_id"), col("lang")),
-      "lang", "doc_id",
-      Map("en" -> 6L, "zh" -> 3L, "de" -> 2L, "es" -> 2L, "fr" -> 1L))
-      .orderBy(col("vt"), col("lang"), col("doc_id")).limit(200)
-    sched.withColumn("pos",
-      row_number().over(Window.orderBy(col("vt"), col("lang"), col("doc_id")))
-        .cast("long")) // window over the 200-row head only
-      .select(col("pos"), col("vt"), col("lang"), col("doc_id"))
-      .orderBy(col("pos"))
-  }
-
-  /** Per-source crawl governance ([[Sampling.perKeyCap]] + blocklist):
-    * blocked sources dropped outright, every other source capped at 20
-    * docs chosen by reproducible md5 rank — the per-domain cap that keeps
-    * one mega-host from dominating a training corpus.
-    */
-  private def q226(s: SparkSession, dir: String): DataFrame =
-    Sampling.perKeyCap(
-      T(s, dir, "documents")
-        .filter(!col("source").isin("src7", "src13"))
-        .select(col("doc_id"), col("source"), col("lang")),
-      "source", "doc_id", cap = 20L)
-      .orderBy(col("doc_id"))
-
-  /** Optimistic concurrency through the log
-    * ([[TxLake.commitTransaction]]): three writers prepared against the
-    * SAME snapshot race. A's erasure DELETE lands first; B's whole-table
-    * compaction — derived from the now-stale snapshot — is rejected (its
-    * rewrite would resurrect A's deleted rows) and rebases against the
-    * new latest; C's append names disjoint files and lands with no retry.
-    * The final state is deterministic: delete ∘ rebased compaction ∘
-    * append, whatever the interleaving.
-    */
-  private def q227(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q227")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    TxLake.commit(s, lake,
-      T(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-        .repartition(3, pmod(col("o_orderkey"), lit(3)))) // v1, 3 files
-    val v1 = TxLake.latestVersion(lake)
-    TxLake.deleteWhereTx(s, lake, col("o_totalprice") > 250000.0, v1)
-    val conflicted =
-      try { TxLake.compactTx(s, lake, v1); false }
-      catch { case _: TxLake.CommitConflictException => true }
-    require(conflicted, "stale compaction must be rejected")
-    TxLake.compactTx(s, lake, TxLake.latestVersion(lake)) // the rebase
-    TxLake.commitTransaction(s, lake,
-      T(s, dir, "orders").filter(col("o_orderkey") % 97 === 0)
-        .select((col("o_orderkey") + 10000000L).as("o_orderkey"),
-          lit("X").as("o_orderstatus"), col("o_totalprice")),
-      removes = Seq.empty, readVersion = v1)
-    TxLake.readSnapshot(s, lake)
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"), sumx(col("o_totalprice")).as("total"))
-      .orderBy(col("o_orderstatus"))
-  }
-
-  /** STREAMING top-k maintenance
-    * ([[graft.streaming.StreamVerify.topkMaintenance]]): the events
-    * arrive as 3 micro-batches; each batch's candidate top-5 per
-    * event_type merges into the k×|groups|-row state table under
-    * exactly-once tagged commits. Top-k is mergeable under the total
-    * order (value DESC, event_id), so the maintained state equals the
-    * one-shot ranking — the oracle.
-    */
-  private def q228(s: SparkSession, dir: String): DataFrame = {
-    val state = graft.streaming.StreamVerify.topkMaintenance(
-      s, T(s, dir, "events"), scratch(dir, "q228"), k = 5)
-    state.withColumn("rnk",
-      row_number().over(Window.partitionBy(col("event_type"))
-        .orderBy(col("value").desc, col("event_id"))).cast("long"))
-      .select(col("event_type"), col("rnk"), col("event_id"), col("value"))
-      .orderBy(col("event_type"), col("rnk"))
-  }
-
-  /** VAD-style energy segmentation over audio-ish payloads
-    * ([[Multimodal.energySegments]]): fixed 256-byte frames, exact
-    * integer byte-sum energies, active frames merged into utterance-span
-    * segments — the activity-detection pass of an audio ingest pipeline,
-    * replayed by the oracle in hex space like q129/q193.
-    */
-  private def q229(s: SparkSession, dir: String): DataFrame =
-    Multimodal.energySegments(
-      Multimodal.attachPayload(T(s, dir, "documents")))
-      .orderBy(col("doc_id"), col("seg_idx"))
-
-  /** Dataloader epoch ordering ([[Sampling.epochShardOrder]]): epoch 2's
-    * seeded shuffle dealt into 4 shards, resumed after 5 consumed samples
-    * per rank — the next 10 positions each rank will read. The (epoch,
-    * consumed) pair is the ENTIRE resume state; no shuffle files or
-    * ordering manifests persist anywhere.
-    */
-  private def q230(s: SparkSession, dir: String): DataFrame =
-    Sampling.epochShardOrder(
-      T(s, dir, "documents").select(col("doc_id")),
-      "doc_id", epoch = 2L, nShards = 4)
-      .filter(col("pos") > 5 && col("pos") <= 15)
-      .orderBy(col("shard"), col("pos"))
-
-  /** Bigram-surprisal quality scoring — q194's unigram filter upgraded to
-    * transition probabilities: each in-doc word transition (with a
-    * per-doc BOS sentinel) is scored `-ln p(w | prev)` under the corpus's
-    * own bigram model (`c_pair / c_prefix`, exact integers), averaged per
-    * document. High = incoherent word soup even when every word is
-    * common — the repetition/gibberish axis unigram models can't see.
-    * Terms hit the 9-decimal grid before the order-independent DECIMAL
-    * sum (§6 discipline, same as q194).
-    */
-  private def q231(s: SparkSession, dir: String): DataFrame = {
-    val words = T(s, dir, "documents").select(col("doc_id"),
-      posexplode(split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " "))
-        .as(Seq("pos", "w")))
-    val big = words
-      .withColumn("prev", coalesce(
-        lag(col("w"), 1).over(
-          Window.partitionBy(col("doc_id")).orderBy(col("pos"))),
-        lit("<s>")))
-      .select(col("doc_id"), col("prev"), col("w"))
-    val cPair = big.groupBy(col("prev"), col("w")).agg(count(lit(1)).as("c_pair"))
-    val cFirst = cPair.groupBy(col("prev")).agg(sum(col("c_pair")).as("c_first"))
-    big.join(cPair, Seq("prev", "w")).join(cFirst, Seq("prev"))
-      .select(col("doc_id"),
-        round(log(col("c_first").cast("double") / col("c_pair").cast("double")), 9)
-          .cast(DecimalType(28, 9)).as("nll"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_trans"),
-        round(sum(col("nll")).cast("double") / count(lit(1)), 6).as("avg_nll"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Scalable global contiguous row ids ([[graft.operators.GlobalOrder]]):
-    * the numbering `ROW_NUMBER() OVER (ORDER BY ...)` produces, computed
-    * WITHOUT the single-partition window Spark would plan for it — range
-    * repartition + local rank + broadcast per-partition offsets. The
-    * driver-side state is O(partitions) longs; every heavy stage is
-    * parallel. RelationalSpec asserts the plan has no SinglePartition
-    * exchange on the numbering path.
-    */
-  private def q232(s: SparkSession, dir: String): DataFrame =
-    graft.operators.GlobalOrder.rowNumbers(
-      T(s, dir, "documents").select(col("doc_id"), col("n_chars")),
-      Seq(col("n_chars").desc, col("doc_id")))
-      .orderBy(col("global_id"))
-
-  /** Event-time completeness audit: per event type, every missing hour in
-    * the type's own [min, max] hour range, reported as contiguous gap
-    * islands — the freshness check a scheduled ingest runs before
-    * publishing a partition. The hour spine is sequence()-generated per
-    * type (O(time span) rows, independent of corpus size), the anti-join
-    * prunes to missing hours only, and the island window runs over that
-    * already-small set.
-    */
-  /** Gap islands over a distinct (event_type, h) hour set — shared by the
-    * batch audit (q233) and the streaming hour-store monitor (q242).
-    */
-  private def gapIslands(hrs: DataFrame): DataFrame = {
-    val spine = hrs.groupBy(col("event_type"))
-      .agg(min(col("h")).as("mn"), max(col("h")).as("mx"))
-      .select(col("event_type"), explode(sequence(col("mn"), col("mx"))).as("h"))
-    val w = Window.partitionBy(col("event_type")).orderBy(col("h"))
-    spine.join(hrs, Seq("event_type", "h"), "left_anti")
-      .withColumn("brk",
-        when(col("h") - lag(col("h"), 1).over(w) === 1, 0).otherwise(1))
-      .withColumn("gap_idx", sum(col("brk")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("event_type"), col("gap_idx"))
-      .agg(
-        timestamp_seconds(min(col("h")) * 3600).cast("timestamp_ntz").as("gap_start"),
-        timestamp_seconds(max(col("h")) * 3600).cast("timestamp_ntz").as("gap_end"),
-        count(lit(1)).as("n_missing"))
-      .orderBy(col("event_type"), col("gap_idx"))
-  }
-
-  private def q233(s: SparkSession, dir: String): DataFrame =
-    gapIslands(T(s, dir, "events")
-      .select(col("event_type"), expr("(ts div 1000000000) div 3600").as("h"))
-      .distinct())
-
-  /** Lexicon-based safety/content flagging — the blocklist scoring stage a
-    * corpus filter runs before training (stand-in terms; swap the lexicon).
-    * Word-boundary exact matches over the normalized split, per-doc hit
-    * counts, distinct matched terms, and a flag on the rounded hit ratio.
-    * One corpus scan; the lexicon is a literal IN-list (broadcast by
-    * construction).
-    */
-  private def q241(s: SparkSession, dir: String): DataFrame = {
-    val lex = Seq("dup", "fast", "slow")
-    val words = T(s, dir, "documents").select(col("doc_id"),
-      explode(split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")).as("w"))
-    words.groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_tokens"),
-        sum(when(col("w").isin(lex: _*), 1L).otherwise(0L)).as("n_hits"),
-        size(array_distinct(collect_list(
-          when(col("w").isin(lex: _*), col("w"))))).cast("long").as("n_terms"))
-      .withColumn("hit_ratio",
-        round(col("n_hits").cast("double") / col("n_tokens"), 6))
-      .withColumn("flagged",
-        when(col("hit_ratio") > 0.01, 1L).otherwise(0L))
-      .orderBy(col("doc_id"))
-  }
-
-  /** STREAMING completeness monitor ([[graft.streaming.StreamVerify
-    * .hourSetMaintenance]]): micro-batches fold distinct (type, hour) pairs
-    * into a standing exactly-once hour store (the O(active hours) state a
-    * freshness monitor keeps — never the events), and the drained store
-    * feeds the same gap-island computation as the batch audit. Union is
-    * commutative + idempotent, so the result is independent of micro-batch
-    * slicing — the gate proves it against q233's oracle verbatim.
-    */
-  private def q242(s: SparkSession, dir: String): DataFrame =
-    gapIslands(graft.streaming.StreamVerify.hourSetMaintenance(
-      s, T(s, dir, "events"), scratch(dir, "q242")))
-
-  /** Ingest-lag profiling: exact p50/p95 (q82's interpolation, identical on
-    * both engines) and max of the event-time → ingest-time delay, per event
-    * type. The test tables carry no ingest timestamp, so the delay is
-    * synthesized deterministically from event_id (documented stand-in — a
-    * real pipeline reads its ingest column here); everything downstream of
-    * that column is the real operator: one window rank + one aggregation,
-    * partitioned by type.
-    */
-  private def q234(s: SparkSession, dir: String): DataFrame = {
-    val lagged = T(s, dir, "events")
-      .select(col("event_type"), col("event_id"),
-        ((col("event_id") * 37) % 1800).cast("double").as("delay_s"))
-    val w = Window.partitionBy(col("event_type")).orderBy(col("delay_s"), col("event_id"))
-    val cw = Window.partitionBy(col("event_type"))
-    val ranked = lagged
-      .withColumn("rn", row_number().over(w))
-      .withColumn("n", count(lit(1)).over(cw))
-    def interp(p: Double): Column = {
-      val pos = lit(1.0) + lit(p) * (col("n").cast("double") - 1.0)
-      val lo = floor(pos).cast("long")
-      val hi = ceil(pos).cast("long")
-      val vLo = max(when(col("rn") === lo, col("delay_s")))
-      val vHi = max(when(col("rn") === hi, col("delay_s")))
-      vLo + max(pos - floor(pos)) * (vHi - vLo)
-    }
-    ranked.groupBy(col("event_type"))
-      .agg(interp(0.5).as("p50_lag"), interp(0.95).as("p95_lag"),
-        max(col("delay_s")).as("max_lag"), max(col("n")).as("n"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Substring-granularity dedup — the layer between q211's exact-line pass
-    * and q21's whole-document pass (Lee et al.'s "Deduplicating Training
-    * Data" runs exactly this k-gram span scan): every word 8-gram occurring
-    * more than once corpus-wide marks its 8-token span, overlapping spans
-    * merge (gaps-and-islands over gram starts: a start within 7 positions
-    * of the previous start overlaps), and each doc reports how much of it
-    * is duplicated substring mass. One explode builds the grams (HOF over
-    * the word array, no self-join), one shuffle counts them, and the span
-    * window runs only over duplicated-gram occurrences.
-    */
-  private def q235(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents").select(col("doc_id"),
-      split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ").as("ws"))
-    // one materialized gram pass: the census aggregate AND the probe side
-    // of the dup join both read the checkpoint — without it the whole
-    // normalize/split/slice/array_join generate ran once per branch
-    // (the plan's two identical Generate subtrees; ~1.9 s of the 2.7 s
-    // isolated cost)
-    val grams = docs.filter(size(col("ws")) >= 8)
-      .select(col("doc_id"), size(col("ws")).as("n"),
-        posexplode(transform(sequence(lit(0), size(col("ws")) - 8),
-          i => array_join(slice(col("ws"), i + 1, lit(8)), " ")))
-          .as(Seq("pos", "g")))
-      .localCheckpoint(true)
-    val counts = grams.groupBy(col("g")).agg(count(lit(1)).as("cnt"))
-    val dup = grams.join(counts.filter(col("cnt") >= 2), Seq("g"))
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
-    dup
-      .withColumn("brk",
-        when(col("pos") - lag(col("pos"), 1).over(w) <= 7, 0).otherwise(1))
-      .withColumn("isl", sum(col("brk")).over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col("doc_id"), col("isl"))
-      .agg(first(col("n")).as("n"), count(lit(1)).as("n_gr"),
-        (max(col("pos")) - min(col("pos")) + 8).as("cov"))
-      .groupBy(col("doc_id"))
-      .agg(max(col("n")).cast("long").as("n_tokens"),
-        sum(col("n_gr")).as("n_dup_grams"),
-        sum(col("cov")).cast("long").as("covered_tokens"),
-        round(sum(col("cov")).cast("double") / max(col("n")), 6).as("dup_ratio"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Corpus drift between two snapshots: Jensen–Shannon divergence over the
-    * unigram distributions (the corpus-level companion to q109's per-feature
-    * PSI — "did the crawl change under me"), reported as the top drifting
-    * words by JSD contribution. Halves stand in for snapshots (doc_id
-    * parity). One corpus scan, one shuffle on word; per-word terms hit the
-    * 9-decimal grid before any comparison (§6 discipline), totals ride a
-    * broadcast single-row join.
-    */
-  private def q236(s: SparkSession, dir: String): DataFrame = {
-    val words = T(s, dir, "documents").select(
-      (col("doc_id") % 2).as("half"),
-      explode(split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")).as("w"))
-    val c = words.groupBy(col("w")).agg(
-      sum(when(col("half") === 0, 1L).otherwise(0L)).as("c0"),
-      sum(when(col("half") === 1, 1L).otherwise(0L)).as("c1"))
-    val tot = c.agg(sum(col("c0")).cast("double").as("n0"),
-      sum(col("c1")).cast("double").as("n1"))
-    val p = col("c0").cast("double") / col("n0")
-    val q = col("c1").cast("double") / col("n1")
-    c.join(broadcast(tot))
-      .withColumn("term_p",
-        when(col("c0") > 0, p * log(lit(2.0) * p / (p + q))).otherwise(lit(0.0)))
-      .withColumn("term_q",
-        when(col("c1") > 0, q * log(lit(2.0) * q / (p + q))).otherwise(lit(0.0)))
-      .select(col("w"), col("c0"), col("c1"),
-        round(lit(0.5) * (col("term_p") + col("term_q")), 9).as("jsd_contrib"))
-      .orderBy(col("jsd_contrib").desc, col("w"))
-      .limit(20)
-  }
-
-  /** Perceptual-hash near-dup over binary payloads — the image half of the
-    * dedup stack (q22/q23 are its text siblings): a 64-bit aHash built from
-    * 64 byte-sum cells over the payload (bit i = cell i above the global
-    * byte mean, compared cross-multiplied so everything stays in exact
-    * integers), packed as four 16-bit bands. Candidate pairs share at least
-    * one band (LSH banding — at corpus scale you widen/multiply bands, same
-    * machinery as q22); survivors have Hamming distance ≤ 10 across all 64
-    * bits. The "decode" is the same deterministic stand-in as fakeDecode:
-    * real pixels would enter at the cell computation, nothing downstream
-    * changes. Oracle replays cell-by-cell in hex space (q229's pattern).
-    */
-  private def q237(s: SparkSession, dir: String): DataFrame = {
-    val hx = T(s, dir, "documents")
-      .select(col("doc_id"), encode(col("text"), "UTF-8").as("bin"))
-      .withColumn("len", length(col("bin")).cast("long"))
-      .filter(col("len") >= 64)
-    // cell i = exact byte sum of slice [i*len/64, (i+1)*len/64); len >= 64
-    // guarantees every cell is non-empty. One codegen'd byte scan
-    // (graft.plans.ByteCellSums) — the previous transform/aggregate/
-    // conv(substring(hex…)) walk paid an interpreted lambda per BYTE
-    // (one 4.7 s job ≈ 80% of the board entry at sf0.1; same
-    // per-element-lambda trap as the q378 ring, same codegen fix).
-    val cells = hx.withColumn("cells",
-      graft.plans.BytesExpressions.byteCellSums(col("bin"), lit(64)))
-      .withColumn("total", aggregate(col("cells"), lit(0L), (a, x) => a + x))
-    // bit i: 64*cell > total (cross-multiplied mean comparison, exact).
-    // The eager checkpoint is load-bearing: HOFs evaluate INTERPRETED, and
-    // without it Catalyst collapses this whole computation into the
-    // self-join's key/predicate expressions — re-deriving the aHash per
-    // COMPARED PAIR (measured: minutes at 5k docs vs seconds materialized)
-    val bands = cells.withColumn("bands",
-      transform(sequence(lit(0), lit(3)), k =>
-        aggregate(sequence(lit(0), lit(15)), lit(0L), (acc, b) =>
-          acc + when(
-            element_at(col("cells"), k * 16 + b + 1) * 64 > col("total"),
-            pow(lit(2.0), b.cast("double")).cast("long")).otherwise(0L))))
-      .select(col("doc_id"), col("bands"))
-      .localCheckpoint(true)
-    val banded = bands.select(col("doc_id"), col("bands"),
-      posexplode(col("bands")).as(Seq("k", "bv")))
-    val pairs = banded.as("a").join(banded.as("b"),
-        col("a.k") === col("b.k") && col("a.bv") === col("b.bv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        col("a.bands").as("ba"), col("b.bands").as("bb"))
-      .distinct()
-    pairs
-      .withColumn("hamming", expr(
-        "cast(bit_count(ba[0] ^ bb[0]) + bit_count(ba[1] ^ bb[1]) + " +
-          "bit_count(ba[2] ^ bb[2]) + bit_count(ba[3] ^ bb[3]) as bigint)"))
-      .filter(col("hamming") <= 10)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** Community detection by synchronous label propagation over the
-    * support-thresholded part co-purchase graph (q162's scale-stable edge
-    * construction: pairs co-occurring in ≥ 2 orders). Three synchronous
-    * rounds; each vertex adopts its neighbors' modal label, ties to the
-    * smallest — fully deterministic, so the oracle replays the fixpoint as
-    * three unrolled CTE rounds. Per-round cost is one equi-join + one
-    * grouped count + one per-vertex window (all key-partitioned); lineage
-    * is cut per round like PageRank's iterations.
-    */
-  private def q238(s: SparkSession, dir: String): DataFrame = {
-    // pairs via one per-order basket array + double explode (the q413
-    // edge build): one shuffle of (ok, pk) rows instead of the
-    // self-join's two
-    val e0 = T(s, dir, "lineitem")
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .groupBy(col("ok"))
-      .agg(collect_set(col("pk")).as("ps"))
-      .select(explode(col("ps")).as("u"), col("ps"))
-      .select(col("u"), explode(col("ps")).as("v"))
-      .filter(col("u") < col("v"))
-      .groupBy(col("u"), col("v"))
-      .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
-      .select(col("u"), col("v"))
-    val edges = e0.union(e0.select(col("v"), col("u")))
-      .toDF("src", "dst").localCheckpoint(true)
-    val mEdges = edges.count()
-    // DRIVER-SIDE propagation when the co-purchase pair graph is
-    // collectable (the Graph-finisher posture): each round's winner is
-    // pure integer arithmetic — neighbor-label counts, max count then
-    // min label — identical to the max-struct below. Distributed loop
-    // retained above the guard.
-    if (mEdges <= 4000000L) {
-      import scala.collection.mutable
-      val m = mEdges.toInt
-      val es = new Array[Int](m); val ed = new Array[Int](m)
-      val idx = new mutable.LongMap[Int](1 << 12)
-      val ids = mutable.ArrayBuilder.make[Long]
-      def idxOf(v: Long): Int = idx.getOrElseUpdate(v, { ids += v; idx.size })
-      val parts = edges.rdd.mapPartitions { it =>
-        val xs = mutable.ArrayBuilder.make[Long]
-        val xd = mutable.ArrayBuilder.make[Long]
-        it.foreach { r => xs += r.getLong(0); xd += r.getLong(1) }
-        Iterator((xs.result(), xd.result()))
-      }.collect()
-      var eid = 0
-      parts.foreach { case (xs, xd) =>
-        var p = 0
-        while (p < xs.length) {
-          es(eid) = idxOf(xs(p)); ed(eid) = idxOf(xd(p)); eid += 1; p += 1
-        }
-      }
-      require(eid == m, "label-prop collect raced a changing edge frame")
-      val allIds = ids.result()
-      val n = allIds.length
-      var lab = allIds.clone() // round 0: every node labels itself
-      for (_ <- 1 to 3) {
-        val cnts = Array.fill(n)(new mutable.LongMap[Long](8))
-        var i = 0
-        while (i < m) {
-          val c = cnts(es(i))
-          val l = lab(ed(i))
-          c.update(l, c.getOrElse(l, 0L) + 1L)
-          i += 1
-        }
-        val next = new Array[Long](n)
-        i = 0
-        while (i < n) {
-          var bestC = -1L; var bestL = 0L
-          cnts(i).foreach { case (l, c) =>
-            if (c > bestC || (c == bestC && l < bestL)) { bestC = c; bestL = l }
-          }
-          next(i) = bestL
-          i += 1
-        }
-        lab = next
-      }
-      val rows = new java.util.ArrayList[org.apache.spark.sql.Row](n)
-      var i = 0
-      while (i < n) {
-        rows.add(org.apache.spark.sql.Row(allIds(i), lab(i)))
-        i += 1
-      }
-      return s.createDataFrame(rows,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("pk",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("label",
-            org.apache.spark.sql.types.LongType)))).orderBy(col("pk"))
-    }
-    var labels = edges.select(col("src").as("pk")).distinct()
-      .withColumn("label", col("pk"))
-    for (_ <- 1 to 3) {
-      // labels are node-sized: broadcast (a checkpointed table's default
-      // size stat would shuffle the edge list every round), and take the
-      // per-node winner as one map-side-combinable max-struct — (max c,
-      // then min label) is exactly the old window's (c desc, label asc)
-      val cnt = edges.join(broadcast(labels), edges("dst") === labels("pk"))
-        .groupBy(edges("src").as("pk2"), col("label"))
-        .agg(count(lit(1)).as("c"))
-      labels = cnt
-        .groupBy(col("pk2"))
-        .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("s"))
-        .select(col("pk2").as("pk"), (-col("s.nl")).as("label"))
-        .localCheckpoint(true)
-    }
-    labels.orderBy(col("pk"))
-  }
-
-  /** Hidden-partitioning read ([[graft.sources.HiddenPartitioning]]): the
-    * table is physically laid out by day(ts) × bucket(8, user_id), but the
-    * query filters only on the raw user id — the read path derives the
-    * bucket predicate itself, so the scan opens one bucket directory in
-    * eight (LayoutSpec proves it from inputFiles). The result is plain
-    * filtered data; the oracle is the straight filter on the source table.
-    */
-  private def q239(s: SparkSession, dir: String): DataFrame = {
-    val root = scratch(dir, "q239")
-    graft.sources.LocalFs.deleteRecursively(root)
-    val ev = T(s, dir, "events").select(
-      col("event_id"), evSec.as("sec"), col("user_id"), col("event_type"), col("value"))
-    graft.sources.HiddenPartitioning.write(ev, root, "sec", "user_id", 8)
-    graft.sources.HiddenPartitioning.read(s, root, "user_id", 8, keyEq = Some(7L))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("total_value"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Bitemporal as-of: VALID time (the business date each order became the
-    * customer's latest) × TRANSACTION time (the lake version that had
-    * ingested it). Orders land in three TxLake commits; the query reads the
-    * table as of tx-version 2 — so the third commit's rows must not exist
-    * for it even when they are valid-time eligible — and then takes each
-    * customer's latest order valid on 1996-01-01. The oracle replays both
-    * temporal filters declaratively (tx membership = the first two ingest
-    * thirds).
-    */
-  private def q240(s: SparkSession, dir: String): DataFrame = {
-    val root = scratch(dir, "q240")
-    graft.sources.LocalFs.deleteRecursively(root)
-    val o = T(s, dir, "orders").select(
-      col("o_orderkey"), col("o_custkey"), col("o_orderdate").as("vd"), col("o_totalprice"))
-    TxLake.commit(s, root, o.filter(col("o_orderkey") % 3 === 0))
-    TxLake.commit(s, root, o.filter(col("o_orderkey") % 3 === 1))
-    TxLake.commit(s, root, o.filter(col("o_orderkey") % 3 === 2))
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("vd").desc, col("o_orderkey").desc)
-    TxLake.readSnapshot(s, root, 2L)
-      .filter(col("vd") <= lit("1996-01-01"))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(col("o_custkey"), col("vd").as("valid_from"),
-        col("o_orderkey"), col("o_totalprice"))
-      .orderBy(col("o_custkey"))
-  }
-
-  /** Sorted-neighborhood dedup (SNM) — the third classic blocking family
-    * after hashing (q21) and LSH banding (q22/q237): records sort by a
-    * normalized key, and only rows within a fixed window of the sorted
-    * order are compared. The global order comes from q232's distributed
-    * numbering (no single-partition window), window-w candidates come from
-    * a bounded 2× block explode (pairs within w share a block — never a
-    * theta-join), and survivors verify with the codegen Jaro–Winkler
-    * (q143's expression, bit-matched to the oracle's built-in).
-    */
-  private def q243(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents").select(col("doc_id"),
-      substring(regexp_replace(lower(trim(col("text"))), "\\s+", " "), 1, 60).as("skey"))
-    val ranked = graft.operators.GlobalOrder.rowNumbers(
-      docs, Seq(col("skey"), col("doc_id")), idCol = "rnk")
-    val blocked = ranked.select(col("doc_id"), col("skey"), col("rnk"),
-      explode(array(
-        floor((col("rnk") - 1) / 4),
-        floor((col("rnk") - 1) / 4) + 1)).as("blk"))
-    val pairs = blocked.as("a").join(blocked.as("b"),
-        col("a.blk") === col("b.blk") && col("b.rnk") > col("a.rnk") &&
-          col("b.rnk") - col("a.rnk") <= 4)
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        col("a.skey").as("ka"), col("b.skey").as("kb"))
-      .distinct()
-    pairs
-      .withColumn("sim",
-        graft.plans.StringSimilarityExpressions.jaroWinkler(col("ka"), col("kb")))
-      .filter(col("sim") >= 0.9)
-      .select(col("id_a"), col("id_b"), round(col("sim"), 6).as("sim"))
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** MERGE with schema evolution ([[TxLake.mergeByKeyEvolve]]): the update
-    * batch carries a column the table has never seen — the merge adds it
-    * as a schema op (existing rows read NULL, pre-evolution time travel
-    * still sees the old shape) instead of failing. The final snapshot's
-    * oracle is fully declarative: updated keys carry the new balance and
-    * segment, untouched keys the old balance and a NULL segment.
-    */
-  private def q244(s: SparkSession, dir: String): DataFrame = {
-    val root = scratch(dir, "q244")
-    graft.sources.LocalFs.deleteRecursively(root)
-    val cust = T(s, dir, "customer")
-    TxLake.commit(s, root,
-      cust.select(col("c_custkey"), col("c_name"), col("c_acctbal")))
-    val upd = cust.filter(col("c_custkey") % 5 === 0)
-      .select(col("c_custkey"), col("c_name"),
-        (col("c_acctbal") + 100.0).as("c_acctbal"),
-        col("c_mktsegment").as("segment"))
-    TxLake.mergeByKeyEvolve(s, root, upd, "c_custkey")
-    TxLake.readSnapshot(s, root).orderBy(col("c_custkey"))
-  }
-
-  /** Time-weighted average value per user (TWAP): each event's value holds
-    * until the next event; the average weights by holding duration, not by
-    * row count — the metric plain AVG silently gets wrong whenever
-    * sampling is uneven (which is always). Weighted mass accumulates in
-    * exact DECIMAL × integer-seconds; the single division happens at the
-    * end in double (§6 discipline).
-    */
-  private def q245(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("sec"), col("event_id"))
-    T(s, dir, "events")
-      .select(col("user_id"), col("event_id"), evSec.as("sec"), col("value"))
-      .withColumn("nxt", lead(col("sec"), 1).over(w))
-      .filter(col("nxt").isNotNull)
-      .withColumn("dur", (col("nxt") - col("sec")).cast(DecimalType(12, 0)))
-      .withColumn("wv", col("value").cast(DecimalType(18, 2)) * col("dur"))
-      .groupBy(col("user_id"))
-      .agg(sum(col("wv")).as("swv"),
-        sum(col("dur")).cast("long").as("span"), count(lit(1)).as("n_holds"))
-      .filter(col("span") > 0)
-      .select(col("user_id"), col("n_holds"),
-        round(col("swv").cast("double") / col("span").cast("double"), 6).as("twap"))
-      .orderBy(col("user_id"))
-  }
-
-  /** RFM customer segmentation — recency / frequency / monetary quartiles,
-    * the standard behavioral-segmentation cut. Each quartile is a GLOBAL
-    * ntile, computed with [[graft.operators.GlobalOrder.ntiles]] (range
-    * shuffle + broadcast offsets) instead of an `ORDER BY` window, so no
-    * stage collapses to one task however many customers exist. Monetary
-    * uses the exact-decimal sum; every ordering carries the custkey
-    * tiebreaker so the tiling is engine-deterministic.
-    */
-  private def q247(s: SparkSession, dir: String): DataFrame = {
-    val day = expr(
-      "unix_micros(cast(o_orderdate as timestamp)) div 1000000 div 86400")
-    val per = T(s, dir, "orders")
-      .groupBy(col("o_custkey").as("custkey"))
-      .agg(max(day).as("last_day"), count(lit(1)).as("freq"),
-        sumx(col("o_totalprice")).as("monetary"))
-    val G = graft.operators.GlobalOrder
-    val r = G.ntiles(per, Seq(col("last_day").desc, col("custkey")), 4, "r")
-    val f = G.ntiles(r, Seq(col("freq").desc, col("custkey")), 4, "f")
-    val m = G.ntiles(f, Seq(col("monetary").desc, col("custkey")), 4, "m")
-    m.select(col("custkey"), col("last_day"), col("freq"), col("monetary"),
-        col("r"), col("f"), col("m"),
-        (col("r") * 100 + col("f") * 10 + col("m")).as("rfm"))
-      .orderBy(col("custkey"))
-  }
-
-  /** CUSUM level-shift detection over per-type hourly revenue
-    * ([[graft.operators.Trend.cusumShifts]]): the recursive statistic in
-    * closed form — cumsum + running-min windows, exact integer throughout.
-    */
-  private def q248(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("event_type"), expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Trend.cusumShifts(
-        hourly, "event_type", "hid", "cents", kCents = 10000L, hCents = 200000L)
-      .orderBy(col("event_type"), col("hid"))
-  }
-
-  /** KMV distinct sketch per event type + the merged union estimate
-    * ([[graft.operators.Sketches.kmvDistinct]]) — the order-statistics
-    * sketch whose internals the oracle replays EXACTLY (md5-derived
-    * 52-bit hashes), unlike the rows-only HLL queries (q37/q119).
-    */
-  private def q249(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sketches.kmvDistinct(
-      T(s, dir, "events"), "event_type", "user_id", k = 64)
-
-  /** 2-D skyline per market segment — the cheapest-earliest Pareto
-    * frontier of orders ([[Relational.skyline2d]]): sort-based windows,
-    * zero self-joins (the oracle replays it with NOT EXISTS dominance).
-    */
-  private def q250(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders").join(
-      T(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment")),
-      col("o_custkey") === col("c_custkey"))
-    Relational.skyline2d(
-        o.select(col("c_mktsegment").as("seg"), col("o_orderkey"),
-          expr("unix_micros(cast(o_orderdate as timestamp)) div 1000000 div 86400")
-            .as("d"),
-          (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long")
-            .as("cents")),
-        Seq("seg"), col("d"), col("cents"))
-      .select(col("seg"), col("o_orderkey"), col("d"), col("cents"))
-      .orderBy(col("seg"), col("d"), col("cents"), col("o_orderkey"))
-  }
-
-  /** Systematic PPS corpus sampling ([[Sampling.systematicPps]]): exactly
-    * k weight-proportional picks per language, deterministic, no
-    * transcendentals — the reproducible alternative to A-Res reservoirs.
-    */
-  private def q251(s: SparkSession, dir: String): DataFrame =
-    Sampling.systematicPps(
-        T(s, dir, "documents").select(col("doc_id"), col("lang"), col("n_chars")),
-        "lang", "doc_id", "n_chars", k = 10)
-      .select(col("doc_id"), col("lang"), col("n_chars"), col("n_crossings"))
-      .orderBy(col("lang"), col("doc_id"))
-
-  /** Accent folding via the engine's codegen [[graft.plans.AccentFold]]
-    * expression (NFD → strip combining marks → NFC). The ASCII corpus is
-    * first deterministically accented (vowels → composed accented forms)
-    * so the fold provably does work, then folded back — the oracle runs
-    * DuckDB's `strip_accents` over the identical accented text and
-    * hash-compares both the accented and folded forms.
-    */
-  private def q252(s: SparkSession, dir: String): DataFrame = {
-    val acc = translate(col("text"), "aeiou", "áéíóú")
-    val folded = graft.plans.UnicodeExpressions.accentFold(acc)
-    T(s, dir, "documents")
-      .select(col("doc_id"),
-        md5(acc.cast("binary")).as("accented_md5"),
-        md5(folded.cast("binary")).as("folded_md5"),
-        (folded === col("text")).cast("int").as("roundtrip"),
-        (length(col("text")) -
-          length(translate(col("text"), "aeiou", ""))).as("n_folded"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Per-user EWMA of hourly spend ([[graft.operators.Trend.ewmaPerKey]]):
-    * a left fold inside one codegen'd higher-order aggregate, replayed
-    * bit-for-bit by the oracle's list_reduce (α = 0.25 is a power of two,
-    * keeping even the products exact).
-    */
-  private def q253(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("user_id"), expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .cast("double").as("v"))
-    graft.operators.Trend.ewmaPerKey(hourly, "user_id", "hid", "v", 0.25)
-      .orderBy(col("user_id"))
-  }
-
-  /** Hierarchical subtree rollup over the digit taxonomy
-    * ([[graft.operators.Graph.subtreeRollup]]): account balances
-    * aggregated up every ancestor via the pointer-doubled closure —
-    * ⌈log₂ depth⌉ joins, fact table touched once.
-    */
-  private def q254(s: SparkSession, dir: String): DataFrame = {
-    val c = T(s, dir, "customer")
-    graft.operators.Graph.subtreeRollup(
-        c.select(col("c_custkey").as("id"),
-          when(col("c_custkey") >= 10, expr("c_custkey DIV 10")).as("parent")),
-        c, "c_custkey", "c_acctbal")
-      .orderBy(col("node"))
-  }
-
-  /** Per-type autocorrelation of the hourly revenue series at lags 1 and
-    * 24 ([[graft.operators.Trend.autocorrPerKey]]) — the seasonality
-    * detector that complements q147's trend and q148's anomalies: one
-    * lead-window pass per lag over the key-partitioned shuffle, exact
-    * DECIMAL(38,0) sums, closed-form Pearson in pinned double order.
-    */
-  private def q255(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("event_type"), expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Trend.autocorrPerKey(
-        hourly, "event_type", "hid", "cents", Seq(1, 24))
-      .orderBy(col("event_type"), col("lag"))
-  }
-
-  /** Mutual information between order status and priority
-    * ([[graft.operators.Drift.mutualInfo]]) — feature relevance from ONE
-    * contingency pass; every window below the groupBy runs over the
-    * |X|·|Y|-row aggregate, never the input. Per-cell terms land on the
-    * 9-decimal grid before the order-independent decimal total.
-    */
-  private def q256(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.mutualInfo(
-        T(s, dir, "orders").select(col("o_orderstatus"), col("o_orderpriority")),
-        "o_orderstatus", "o_orderpriority")
-      .orderBy(col("x"), col("y"))
-
-  /** Full CDC apply through [[graft.sources.TxLake.mergeCdc]]: inserts,
-    * updates and flagged deletes land in ONE merge batch — the
-    * `WHEN MATCHED AND cond THEN DELETE` clause the merge family lacked
-    * (deletes previously routed separately through deleteWhere/DVs) —
-    * with the same affected-file-only rewrite. The batch also carries a
-    * delete for an absent key, which must be a no-op.
-    */
-  private def q257(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLake
-    val lake = scratch(dir, "q257") + "/lake"
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val cust = T(s, dir, "customer")
-      .select(col("c_custkey"),
-        col("c_acctbal").cast(DecimalType(12, 2)).as("bal"))
-      .filter(col("c_custkey") <= 500)
-    TxLake.commit(s, lake, cust.filter(col("c_custkey") <= 250).coalesce(1))
-    TxLake.commit(s, lake, cust.filter(col("c_custkey") > 250).coalesce(1))
-    val zero = lit(java.math.BigDecimal.ZERO).cast(DecimalType(12, 2))
-    val cdc = cust.filter(col("c_custkey") % 7 === 0)
-      .select(col("c_custkey"), col("bal"), lit(true).as("__op_delete"))
-      .unionByName(cust
-        .filter(col("c_custkey") % 5 === 0 && col("c_custkey") % 7 =!= 0)
-        .select(col("c_custkey"), zero.as("bal"), lit(false).as("__op_delete")))
-      .unionByName(s.range(10001, 10006).select(col("id").as("c_custkey"),
-        lit(java.math.BigDecimal.ONE).cast(DecimalType(12, 2)).as("bal"),
-        lit(false).as("__op_delete")))
-      .unionByName(s.range(20001, 20002).select(col("id").as("c_custkey"),
-        zero.as("bal"), lit(true).as("__op_delete")))
-    TxLake.mergeCdc(s, lake, cdc, "c_custkey", "__op_delete")
-    TxLake.readSnapshot(s, lake)
-      .select(col("c_custkey"), col("bal").cast("double").as("bal"))
-      .orderBy(col("c_custkey"))
-  }
-
-  /** Avro round-trip through [[graft.sources.AvroIo]] — the q73-ORC
-    * pattern for the one mainstream batch format the source matrix still
-    * lacked. spark-avro's DataSource is absent here, so the container
-    * files are written/read directly against the public Avro core API:
-    * one file per partition on write, one lazy-decoding task per file on
-    * read, nullable columns as `["null", T]` unions. The read-back
-    * aggregate must equal the plain aggregate over the original table.
-    */
-  private def q258(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.AvroIo
-    val path = scratch(dir, "q258")
-    graft.sources.LocalFs.deleteRecursively(path)
-    val src = T(s, dir, "events")
-      .select(col("event_id"), col("event_type"), col("value"))
-    AvroIo.write(src, path)
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    AvroIo.read(s, path, schema)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("total_value"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Streaming three-clause CDC
-    * ([[graft.streaming.StreamVerify.cdcApplyDeletes]]): per micro-batch,
-    * the newest row per user upserts and a terminal 'error' tombstones
-    * the user's row via [[graft.sources.TxLake.mergeCdc]]'s matched-
-    * DELETE. Time-sliced source files make the sequential merges converge
-    * to the global newest state, so the drained table is exactly "latest
-    * event per user, minus users whose latest is the tombstone".
-    */
-  private def q259(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.cdcApplyDeletes(
-        s, q259Events(s, dir), scratch(dir, "q259"), tombstone = "error")
-      .orderBy(col("user_id"))
-
-  /** KMV sketch set-algebra ([[graft.operators.Sketches.kmvJaccard]]):
-    * pairwise Jaccard between event types' user sets estimated from the
-    * k-min sketches alone — everything past the sketch pass is
-    * sketch-sized (|G|² pairs × ≤ 2k rows), and the md5-derived
-    * estimator replays exactly in the oracle.
-    */
-  private def q260(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sketches.kmvJaccard(
-      T(s, dir, "events"), "event_type", "user_id", k = 64)
-
-  /** Per-user Holt double-exponential smoothing of hourly spend
-    * ([[graft.operators.Trend.holtPerKey]]): level + trend folded in one
-    * codegen'd higher-order aggregate, α=β=0.5 powers of two — the
-    * trend-aware forecast EWMA (q253) structurally lags. The oracle
-    * replays the recursion with a recursive CTE, same IEEE op order.
-    */
-  private def q261(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("user_id"), expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .cast("double").as("v"))
-    graft.operators.Trend.holtPerKey(hourly, "user_id", "hid", "v", 0.5, 0.5)
-      .orderBy(col("user_id"))
-  }
-
-  /** Per-type HOLT–WINTERS triple exponential smoothing
-    * ([[graft.operators.Trend.holtWintersPerKey]]): level + trend +
-    * 24-hour additive seasonality folded in ONE codegen'd HOF aggregate
-    * with an array-slot struct accumulator — the daily-cycle forecaster
-    * q261's trend-only Holt structurally misses. α=0.5, β=γ=0.25 (powers
-    * of two, exact complements); the oracle replays the identical
-    * recursion as a recursive CTE carrying the 24 slots as a LIST.
-    */
-  private def q315(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("event_type"), expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .cast("double").as("v"))
-    graft.operators.Trend.holtWintersPerKey(hourly, "event_type", "hid", "v",
-        0.5, 0.25, 0.25, 24)
-      .orderBy(col("event_type"))
-  }
-
-  /** Mergeable quantile sketch
-    * ([[graft.operators.Sketches.quantileSketch]]): per-day bottom-k-by-
-    * hash samples over event values merge to the period p50/p90/p99
-    * without re-scanning facts — the sketch shelf's quantile member next
-    * to KMV/HLL/CMS/bitmaps. Bottom-k chosen over KLL deliberately: the
-    * merge is EXACTLY the global bottom-k (pure function of md5 hashes),
-    * so the whole pipeline replays hash-for-hash in the oracle, where
-    * KLL's compactor coin flips could never (SURVEY §5 frontier #4).
-    */
-  private def q316(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sketches.quantileSketch(
-      T(s, dir, "events"),
-      expr("date_format(timestamp_seconds(ts div 1000000000), 'yyyy-MM-dd')"),
-      "event_id", "value", 256, Seq(0.5, 0.9, 0.99))
-
-  /** Column lineage anchored on TXLAKE READS
-    * ([[graft.plans.Lineage.columnLineageLake]]): leaves resolve by LAKE
-    * PATH — the catalog's production shape, where a `TxLake.readSnapshot`
-    * frame has no DataFrame object or view name to anchor on and the
-    * physical layout IS the table identity. The plain-parquet customer
-    * read resolves through the same path rule. Oracle = the hand-derived
-    * edge list (count(*) has NO leaf source — absence is the audited
-    * fact).
-    */
-  private def q317(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLake
-    val root = scratch(dir, "q317")
-    graft.sources.LocalFs.deleteRecursively(root)
-    val lake = root + "/orders_lake"
-    TxLake.commit(s, lake, T(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")))
-    val snap = TxLake.readSnapshot(s, lake)
-    val cust = T(s, dir, "customer")
-      .select(col("c_custkey"), col("c_mktsegment"))
-    val q = snap.join(cust, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_orders"), sumx(col("o_totalprice")).as("revenue"))
-      .select(col("c_mktsegment").as("segment"), col("n_orders"),
-        col("revenue"), upper(col("c_mktsegment")).as("segment_uc"))
-    graft.plans.Lineage.columnLineageLake(q,
-        Map("orders_lake" -> lake, "customer_pq" -> s"$dir/customer.parquet"))
-      .orderBy(col("out_col"), col("src_table"), col("src_col"))
-  }
-
-  /** EXACT global percentiles
-    * ([[graft.operators.GlobalOrder.exactPercentiles]]): the ground truth
-    * q316's sketch approximates, at a plan with NO single-partition sort —
-    * range-shuffle global ranks, then each quantile prunes to one row by
-    * an equi-join on rank = ⌈q·N⌉ against a broadcast spine.
-    */
-  private def q318(s: SparkSession, dir: String): DataFrame =
-    graft.operators.GlobalOrder.exactPercentiles(
-      T(s, dir, "events"), "value", "event_id", Seq(0.5, 0.9, 0.99))
-
-  /** MANN–WHITNEY U with tie correction
-    * ([[graft.operators.Drift.mannWhitney]]): the non-parametric
-    * location test next to q283's z-test and q295's KS — purchase vs
-    * click values, ranks computed over the VALUE DOMAIN (never a per-row
-    * global sort), doubled-rank and tie sums exact in DECIMAL(38,0).
-    */
-  private def q319(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.mannWhitney(
-      T(s, dir, "events")
-        .filter(col("event_type").isin("purchase", "click")),
-      "value", col("event_type") === "purchase")
-
-  /** THEIL–SEN robust slope per event type
-    * ([[graft.operators.Trend.theilSenPerKey]]): the median of all
-    * pairwise hourly slopes — a 29%-breakdown trend estimate OLS (q147/
-    * q293) can't give; pair generation key-local and bounded by the hour
-    * domain.
-    */
-  private def q320(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("event_type"), expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("v"))
-    graft.operators.Trend.theilSenPerKey(hourly, "event_type", "hid", "v")
-      .orderBy(col("event_type"))
-  }
-
-  /** KAPLAN–MEIER survival over user lifetimes
-    * ([[graft.operators.Trend.kaplanMeier]]): right-censoring-correct
-    * retention curve (users last seen in the final time tertile are
-    * censored, not churned); everything past one per-user aggregate runs
-    * over the duration domain; the survival product folds sequentially
-    * and replays via list_reduce.
-    */
-  private def q321(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .select(col("user_id"), expr("ts div 1000000000").cast("long").as("sec"))
-    val b = ev.agg(min(col("sec")).as("lo"), max(col("sec")).as("hi")).head()
-    val cutoff = b.getLong(0) + 2L * (b.getLong(1) - b.getLong(0)) / 3L
-    graft.operators.Trend.kaplanMeier(ev, "user_id", "sec", cutoff)
-      .orderBy(col("t"))
-  }
-
-  /** l-DIVERSITY audit ([[graft.operators.Privacy.lDiversity]]): the
-    * homogeneity-attack check k-anonymity (q217) misses — per
-    * (nation, segment) class: size, distinct balance buckets, dominant
-    * share, and the l≥3 flag. Class-domain aggregates only.
-    */
-  private def q322(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Privacy.lDiversity(
-      T(s, dir, "customer")
-        .withColumn("bal_bucket",
-          floor(col("c_acctbal").cast("double") / 2000.0).cast("long")),
-      Seq("c_nationkey", "c_mktsegment"), "bal_bucket", 3)
-      .orderBy(col("c_nationkey"), col("c_mktsegment"))
-
-  /** LEAVE-ONE-OUT target encoding with m-estimate smoothing
-    * ([[graft.operators.Features.targetEncodeLoo]]): the high-cardinality
-    * categorical encoder that never leaks a row's own label into its
-    * feature — segment-level sums broadcast back, the fact table never
-    * shuffles for the encode.
-    */
-  private def q324(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"),
-        (col("o_orderstatus") === "F").cast("long").as("target"))
-      .join(T(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-    graft.operators.Features.targetEncodeLoo(o, "c_mktsegment", "target", 10.0)
-      .select(col("o_orderkey"), col("c_mktsegment").as("segment"),
-        col("target"), col("enc"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** WEIGHT OF EVIDENCE / INFORMATION VALUE
-    * ([[graft.operators.Features.woeIv]]): the credit-scoring audit of a
-    * numeric feature against a binary target — per price bin,
-    * ln(goodShare/badShare) with Laplace smoothing and the IV total; all
-    * shares from exact integer counts, ln replayed cross-engine (the
-    * q256 discipline).
-    */
-  private def q325(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Features.woeIv(T(s, dir, "orders"), "o_totalprice",
-        col("o_orderstatus") === "F", 10)
-      .orderBy(col("bin"))
-
-  /** Streaming QUANTILE-SKETCH maintenance
-    * ([[graft.streaming.StreamVerify.quantileSketchMaintenance]]): q316's
-    * mergeable bottom-k sample kept current per micro-batch as
-    * exactly-once TxLake delta commits (O(batch + k) each); because the
-    * merge IS the global bottom-k, the standing store must answer
-    * p50/p90/p99 exactly as the one-shot batch sketch — however the
-    * stream sliced the data.
-    */
-  private def q326(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.quantileSketchMaintenance(
-      s, q259Events(s, dir), scratch(dir, "q326"), 256, Seq(0.5, 0.9, 0.99))
-
-  /** Streaming SKETCH-STORE maintenance
-    * ([[graft.streaming.StreamVerify.sketchStoreMaintenance]]): q356's
-    * log-resident sketches fed by the stream — each micro-batch lands
-    * its raw rows as an exactly-once commit CARRYING the SketchSpec, so
-    * the stats surface maintains itself as a side effect of ingestion
-    * and p50/p90/p99 read only the log. Bottom-k merges exactly across
-    * batch boundaries → same oracle as q356 (the whole-corpus replay).
-    */
-  private def q359(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.sketchStoreMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q359"), 256, Seq(0.5, 0.9, 0.99))
-
-  /** Partition COMPLETENESS / FRESHNESS audit: per day — event count,
-    * distinct hours with data, head offset and tail gap in seconds, and
-    * the 24-hour completeness flag. The ops dashboard that catches a
-    * stalled upstream feed before consumers do; one map-side-combined
-    * aggregate over integer second arithmetic.
-    */
-  private def q327(s: SparkSession, dir: String): DataFrame = {
-    val sec = expr("ts div 1000000000")
-    T(s, dir, "events")
-      .select(sec.cast("long").as("sec"))
-      .groupBy(expr("sec div 86400").as("day"))
-      .agg(count(lit(1)).as("n_events"),
-        countDistinct(expr("(sec div 3600) % 24")).as("n_hours"),
-        (min(col("sec")) % 86400L).as("head_offset_sec"),
-        (lit(86399L) - max(col("sec")) % 86400L).as("tail_gap_sec"))
-      .withColumn("complete", (col("n_hours") === 24L).cast("int"))
-      .orderBy(col("day"))
-  }
-
-  /** EMBEDDING-distribution drift
-    * ([[graft.operators.Similarity.embeddingDrift]]): per-dimension mean
-    * shift between the even- and odd-label slices plus the cosine between
-    * mean vectors — the audit a re-embedding run needs before its vectors
-    * are trusted; everything past the one explode is dim-domain-sized.
-    */
-  private def q328(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Similarity.embeddingDrift(
-        T(s, dir, "embeddings"), "embedding", col("label") % 2 === 0)
-      .orderBy(col("dim"))
-
-  /** CLASS-BALANCED downsampling
-    * ([[graft.operators.Sampling.balancedDownsample]]): every event type
-    * keeps exactly the minority count, rows chosen by md5-hash order —
-    * the deterministic rebalance a training pipeline can re-run without
-    * changing the training set.
-    */
-  private def q329(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.balancedDownsample(
-        T(s, dir, "events").select(col("event_id"), col("event_type")),
-        "event_type", "event_id")
-      .orderBy(col("event_type"), col("event_id"))
-
-  /** Binary-classifier evaluation
-    * ([[graft.operators.Features.binaryMetrics]]): confusion matrix +
-    * P/R/F1 at a threshold and EXACT rank-statistic ROC-AUC (the
-    * Mann–Whitney identity) — ranks over the score domain, never a
-    * corpus sort; price "scores" predicting finished orders.
-    */
-  private def q330(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Features.binaryMetrics(T(s, dir, "orders"),
-      "o_totalprice", col("o_orderstatus") === "F", 150000.0)
-
-  /** SQL-surface LATERAL join (correlated subquery in FROM with
-    * ORDER BY + LIMIT): top-2 orders per customer spelled the way an
-    * analyst writes it — the declarative twin of the q52 window
-    * formulation, proving Spark's decorrelation handles the
-    * ordered-limit case.
-    */
-  private def q331(s: SparkSession, dir: String): DataFrame = {
-    T(s, dir, "customer").createOrReplaceTempView("customer_v331")
-    T(s, dir, "orders").createOrReplaceTempView("orders_v331")
-    s.sql("""SELECT c.c_custkey, t.o_orderkey, t.price
-      FROM customer_v331 c
-      JOIN LATERAL (
-        SELECT o_orderkey,
-               CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price
-        FROM orders_v331 o
-        WHERE o.o_custkey = c.c_custkey
-        ORDER BY o.o_totalprice DESC, o.o_orderkey LIMIT 2) t
-      ORDER BY c.c_custkey, t.o_orderkey""")
-  }
-
-  /** Per-document BYTE ENTROPY over the payload bytes — the multimodal
-    * corruption/quality detector (truncated or zero-padded blobs crater;
-    * compressed/encrypted ones saturate): a one-pass codegen byte census
-    * ([[graft.plans.ByteHistogram]], 256-long array per doc) finished in
-    * array HOFs — no row per byte ever exists, where the explode
-    * formulation pushed ~corpus-bytes intermediate rows through the scan
-    * stage (~10¹⁴ at 100 TB; ScaleProbe measures the gap). Entropy terms
-    * stay on the 1e-9 decimal grid summed exactly, so the hash matches
-    * the hex-pair oracle bit-for-bit. The payload here is the document's
-    * utf8 bytes — the plumbing carries to any binary column.
-    */
-  private def q332(s: SparkSession, dir: String): DataFrame = {
-    T(s, dir, "documents")
-      .select(col("doc_id"),
-        graft.plans.TextHashExpressions.byteHistogram(col("text").cast("binary"))
-          .as("hist"))
-      .withColumn("n_bytes", expr("aggregate(hist, 0L, (a, c) -> a + c)"))
-      .filter(col("n_bytes") > 0)
-      .withColumn("present", expr("filter(hist, c -> c > 0)"))
-      .select(col("doc_id"), col("n_bytes"),
-        size(col("present")).cast("long").as("n_distinct_bytes"),
-        expr("""CAST(aggregate(
-            transform(present, c -> CAST(round(
-              -(CAST(c AS DOUBLE) / CAST(n_bytes AS DOUBLE)) *
-                ln(CAST(c AS DOUBLE) / CAST(n_bytes AS DOUBLE)), 9)
-              AS DECIMAL(18,9))),
-            CAST(0 AS DECIMAL(18,9)),
-            (a, t) -> CAST(a + t AS DECIMAL(18,9))) AS DOUBLE)""").as("entropy"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** EXACT Shapley-value attribution
-    * ([[graft.operators.Attribution.shapley]]): converting users collapse
-    * to a 16-bucket touched-channel mask census; coalition values,
-    * factorial weights and both v(S) lookups are broadcast spines; φ is
-    * an exact scaled integer until one division by 4!.
-    */
-  private def q333(s: SparkSession, dir: String): DataFrame = {
-    val masks = T(s, dir, "events")
-      .groupBy(col("user_id"))
-      .agg(
-        (max(when(col("event_type") === "click", 1).otherwise(0)) +
-          max(when(col("event_type") === "view", 2).otherwise(0)) +
-          max(when(col("event_type") === "signup", 4).otherwise(0)) +
-          max(when(col("event_type") === "error", 8).otherwise(0))).as("mask"),
-        max(when(col("event_type") === "purchase", 1).otherwise(0)).as("conv"))
-      .filter(col("conv") === 1)
-      .groupBy(col("mask")).agg(count(lit(1)).as("n"))
-    graft.operators.Attribution.shapley(masks,
-        Seq(("click", 1), ("view", 2), ("signup", 4), ("error", 8)))
-      .orderBy(col("channel"))
-  }
-
-  /** Per-user INTERVAL UNION ([[graft.operators.Relational.intervalUnion]]):
-    * each event opens a 10-minute activity span; overlapping spans merge
-    * into maximal disjoint ones — total covered time under decay, the
-    * coverage question q64's point-gap islands can't answer (an interval
-    * can swallow a later-starting but earlier-ending one).
-    */
-  private def q334(s: SparkSession, dir: String): DataFrame = {
-    val sec = expr("ts div 1000000000")
-    graft.operators.Relational.intervalUnion(
-        T(s, dir, "events").select(col("user_id"), sec.cast("long").as("s0"),
-          (sec.cast("long") + 600L).as("e0")),
-        "user_id", "s0", "e0")
-      .orderBy(col("user_id"), col("span_start"))
-  }
-
-  /** SPEARMAN rank correlation ([[graft.operators.Relational.spearman]]):
-    * monotone association between per-user activity and spend — ranks
-    * over each variable's own value domain with tie averaging (the q319
-    * machinery twice), ρ exact until one pinned-double finish.
-    */
-  private def q335(s: SparkSession, dir: String): DataFrame = {
-    val per = T(s, dir, "events")
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("acts"),
-        (sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-          .as("cents"))
-    graft.operators.Relational.spearman(per, "acts", "cents")
-  }
-
-  /** SUBJECT ACCESS REPORT (the GDPR/DSAR production query): every
-    * record about each probed subject gathered across heterogeneous
-    * tables into one canonical (subject, source, key, payload-md5)
-    * listing — the union-of-schemas shape a privacy office actually
-    * runs; probe set = the two smallest purchasing users, broadcast.
-    */
-  private def q336(s: SparkSession, dir: String): DataFrame = {
-    val subj = T(s, dir, "events")
-      .filter(col("event_type") === "purchase")
-      .select(col("user_id").as("subject_id")).distinct()
-      .orderBy(col("subject_id")).limit(2)
-    val ev = T(s, dir, "events")
-      .join(broadcast(subj), col("user_id") === col("subject_id"))
-      .select(col("subject_id"), lit("events").as("source"),
-        col("event_id").as("record_key"),
-        md5(concat_ws("|", col("user_id"), col("event_type"),
-          expr("ts div 1000000000"),
-          (col("value").cast(DecimalType(18, 2)) * 100).cast("long")))
-          .as("payload_md5"))
-    val ord = T(s, dir, "orders")
-      .join(broadcast(subj), col("o_custkey") === col("subject_id"))
-      .select(col("subject_id"), lit("orders").as("source"),
-        col("o_orderkey").as("record_key"),
-        md5(concat_ws("|", col("o_orderkey"), col("o_orderstatus"),
-          (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long")))
-          .as("payload_md5"))
-    val cust = T(s, dir, "customer")
-      .join(broadcast(subj), col("c_custkey") === col("subject_id"))
-      .select(col("subject_id"), lit("customer").as("source"),
-        col("c_custkey").as("record_key"),
-        md5(concat_ws("|", col("c_name"), col("c_mktsegment")))
-          .as("payload_md5"))
-    ev.unionByName(ord).unionByName(cust)
-      .orderBy(col("subject_id"), col("source"), col("record_key"))
-  }
-
-  /** LATE-ARRIVING DIMENSION with park-and-replay: facts joining a
-    * half-arrived dimension resolve what they can, PARK the rest in a
-    * TxLake pending table (exactly-once, auditable), and re-resolve when
-    * the second half lands; truly-missing dims (key % 97 == 0, dropped
-    * from both halves) surface with a NULL attribute instead of
-    * silently vanishing. The converged union must equal the one-shot
-    * left join against the full dimension.
-    */
-  private def q337(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLake
-    val root = scratch(dir, "q337")
-    graft.sources.LocalFs.deleteRecursively(root)
-    val facts = T(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-    val dim = T(s, dir, "customer")
-      .select(col("c_custkey"), col("c_mktsegment"))
-      .filter(col("c_custkey") % 97 =!= 0)
-    val h1 = dim.filter(col("c_custkey") % 2 === 0)
-    val h2 = dim.filter(col("c_custkey") % 2 === 1)
-    val r1 = facts.join(h1, col("o_custkey") === col("c_custkey"))
-      .select(col("o_orderkey"), col("o_custkey"),
-        col("c_mktsegment").as("segment"))
-    TxLake.commit(s, s"$root/pending",
-      facts.join(h1, col("o_custkey") === col("c_custkey"), "left_anti"))
-    val parked = TxLake.readSnapshot(s, s"$root/pending")
-    val r2 = parked.join(h2, col("o_custkey") === col("c_custkey"))
-      .select(col("o_orderkey"), col("o_custkey"),
-        col("c_mktsegment").as("segment"))
-    val still = parked
-      .join(h2, col("o_custkey") === col("c_custkey"), "left_anti")
-      .select(col("o_orderkey"), col("o_custkey"),
-        lit(null).cast("string").as("segment"))
-    r1.unionByName(r2).unionByName(still).orderBy(col("o_orderkey"))
-  }
-
-  /** GINI COEFFICIENT of customer revenue concentration
-    * ([[graft.operators.GlobalOrder.rowNumbers]] + one exact aggregate):
-    * G = (2·Σi·xᵢ − (n+1)·Σx)/(n·Σx) over ascending-ranked exact cents —
-    * the inequality scalar a marketplace health report leads with; ranks
-    * from the range shuffle, numerator exact in DECIMAL(38,0).
-    */
-  private def q338(s: SparkSession, dir: String): DataFrame = {
-    val d38 = DecimalType(38, 0)
-    val rev = T(s, dir, "orders")
-      .groupBy(col("o_custkey"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("cents"))
-    val ranked = graft.operators.GlobalOrder.rowNumbers(
-      rev, Seq(col("cents"), col("o_custkey")), "i")
-    ranked
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("total_cents"),
-        sum(col("i").cast(d38) * col("cents").cast(d38)).as("s2"))
-      .select(col("n"), col("total_cents"),
-        round((lit(2L) * col("s2") -
-            (col("n") + 1L).cast(d38) * col("total_cents").cast(d38))
-            .cast("double") /
-          (col("n").cast(d38) * col("total_cents").cast(d38)).cast("double"),
-          6).as("gini"))
-  }
-
-  /** ABC INVENTORY CLASSES over part revenue
-    * ([[graft.operators.GlobalOrder.prefixSums]]): cumulative revenue
-    * share under descending order WITHOUT a single-partition window —
-    * the range-shuffle prefix sum; class cut-offs compared as exact
-    * integer cross-products (cum·100 ≤ tot·80), so no double share can
-    * flip a part across the A/B boundary between engines.
-    */
-  private def q339(s: SparkSession, dir: String): DataFrame = {
-    val d38 = DecimalType(38, 0)
-    val rev = T(s, dir, "lineitem")
-      .groupBy(col("l_partkey"))
-      .agg((sum(col("l_extendedprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("cents"))
-    val cum = graft.operators.GlobalOrder.prefixSums(
-      rev, Seq(col("cents").desc, col("l_partkey")), "cents", "cum")
-    val tot = rev.agg(sum(col("cents")).as("tot"))
-    cum.crossJoin(broadcast(tot))
-      .withColumn("abc_class",
-        when(col("cum").cast(d38) * 100 <= col("tot").cast(d38) * 80, "A")
-          .when(col("cum").cast(d38) * 100 <= col("tot").cast(d38) * 95, "B")
-          .otherwise("C"))
-      .groupBy(col("abc_class"))
-      .agg(count(lit(1)).as("n_parts"), sum(col("cents")).as("cents"),
-        round(sum(col("cents")).cast("double") /
-          max(col("tot")).cast("double"), 6).as("share"))
-      .orderBy(col("abc_class"))
-  }
-
-  /** MinHash-LSH RECALL METER against exact shingle-Jaccard ground truth
-    * on a capped evaluation sample — q215's "measured, not assumed"
-    * discipline applied to dedup: truth = exact 3-shingle Jaccard ≥ 0.35
-    * (all pairs over the broadcast sample), candidates = the production
-    * q84 minhash pipeline at its 0.3 threshold; emits hit counts +
-    * precision/recall. This is exactly how a corpus pipeline audits its
-    * banding config before trusting it at 100 TB.
-    */
-  private def q340(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Dedup
-    val docs = T(s, dir, "documents").filter(col("doc_id") < 300)
-    val sets = Dedup.shingleHashRows(docs, "doc_id", "text", 3)
-      .groupBy(col("doc_id"))
-      .agg(array_sort(collect_set(col("sh"))).as("g"))
-    // all-pairs ONLY over the capped broadcast sample (45k pairs) — the
-    // labeled-sample shape, never the corpus
-    val truth = sets.select(col("doc_id").as("id_a"), col("g").as("ga"))
-      .join(broadcast(sets.select(col("doc_id").as("id_b"), col("g").as("gb"))),
-        col("id_a") < col("id_b"))
-      .filter(size(array_intersect(col("ga"), col("gb"))).cast("double") /
-        size(array_union(col("ga"), col("gb"))).cast("double") >= 0.35)
-      .select(col("id_a"), col("id_b"), lit(1L).as("t"))
-    val cand = Dedup.minhashNearDupPairs(docs, "doc_id", "text",
-        threshold = 0.3)
-      .select(col("id_a"), col("id_b"), lit(1L).as("c"))
-    truth.join(cand, Seq("id_a", "id_b"), "full")
-      .agg(sum(col("t")).as("n_truth"), sum(col("c")).as("n_cand"),
-        sum(col("t") * col("c")).as("n_hit"))
-      .select(col("n_truth"), col("n_cand"), col("n_hit"),
-        round(col("n_hit").cast("double") / col("n_truth").cast("double"), 6)
-          .as("recall"),
-        round(col("n_hit").cast("double") / col("n_cand").cast("double"), 6)
-          .as("precision"))
-  }
-
-  /** Per-user BURSTINESS B = (σ−μ)/(σ+μ) of inter-event gaps — the
-    * event-cadence fingerprint (B→−1 periodic/bot-like, B→0 Poisson,
-    * B→1 bursty/human) next to q304's entropy regularity; gap moments
-    * exact in DECIMAL(38,0), one pinned-double finish.
-    */
-  private def q341(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val d38 = DecimalType(38, 0)
-    val sec = expr("ts div 1000000000")
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("sec"), col("event_id"))
-    val gaps = T(s, dir, "events")
-      .select(col("user_id"), sec.cast("long").as("sec"), col("event_id"))
-      .withColumn("gap", col("sec") - lag(col("sec"), 1).over(w))
-      .filter(col("gap").isNotNull)
-    def dbl(c: Column): Column = c.cast("double")
-    val a = gaps.groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_gaps"),
-        sum(col("gap").cast(d38)).as("sg"),
-        sum(col("gap").cast(d38) * col("gap").cast(d38)).as("sq"))
-      .filter(col("n_gaps") >= 3)
-    val mu = dbl(col("sg")) / dbl(col("n_gaps"))
-    val sd = sqrt(dbl(col("n_gaps")) * dbl(col("sq")) -
-      dbl(col("sg")) * dbl(col("sg"))) / dbl(col("n_gaps"))
-    a.select(col("user_id"), col("n_gaps"), round(mu, 6).as("mean_gap"),
-        round((sd - mu) / (sd + mu), 6).as("burstiness"))
-      .orderBy(col("user_id"))
-  }
-
-  /** RETRACTABLE incremental view maintenance: a per-status aggregate
-    * kept current under a CDC tape (insert → update → delete slices) by
-    * RETRACTION DELTAS — every matched key contributes −old, every
-    * surviving op +new, and only the status-domain-sized delta ever
-    * merges into the standing aggregate; the base table never re-scans
-    * (q201 maintains under inserts; this is the Materialize-style
-    * general case deletes and updates need). The converged aggregate
-    * must equal the direct aggregate over the final table state.
-    */
-  private def q342(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLake
-    val root = scratch(dir, "q342")
-    graft.sources.LocalFs.deleteRecursively(root)
-    val cur = s"$root/cur"; val aggDir = s"$root/agg"
-    val o = T(s, dir, "orders").select(col("o_orderkey").as("k"),
-      col("o_orderstatus").as("st"),
-      (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long")
-        .as("cents"))
-    val tape = Seq(
-      o.withColumn("del", lit(false)),
-      o.filter(col("k") % 5 === 0)
-        .withColumn("cents", col("cents") * 2)
-        .withColumn("del", lit(false)),
-      o.filter(col("k") % 7 === 0).withColumn("del", lit(true)))
-    tape.zipWithIndex.foreach { case (ops0, i) =>
-      val ops = ops0.localCheckpoint(true)
-      val plus = ops.filter(!col("del"))
-        .select(col("st"), lit(1L).as("dn"), col("cents").as("dc"))
-      val delta = (if (i == 0) plus
-        else TxLake.readSnapshot(s, cur)
-          .join(ops.select(col("k")), Seq("k"), "left_semi")
-          .select(col("st"), lit(-1L).as("dn"), (-col("cents")).as("dc"))
-          .unionByName(plus))
-        .groupBy(col("st"))
-        .agg(sum(col("dn")).as("dn"), sum(col("dc")).as("dc"))
-      val merged = (if (i == 0)
-          delta.select(col("st"), col("dn").as("n"), col("dc").as("cents"))
-        else s.read.parquet(aggDir).localCheckpoint(true)
-          .join(delta, Seq("st"), "full")
-          .select(col("st"),
-            (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L)))
-              .as("n"),
-            (coalesce(col("cents"), lit(0L)) + coalesce(col("dc"), lit(0L)))
-              .as("cents")))
-        .localCheckpoint(true)
-      merged.coalesce(1).write.mode("overwrite").parquet(aggDir)
-      if (i == 0) TxLake.commit(s, cur, ops.drop("del"))
-      else TxLake.mergeCdc(s, cur, ops, "k", "del")
-    }
-    s.read.parquet(aggDir).filter(col("n") =!= 0L)
-      .orderBy(col("st"))
-  }
-
-  /** QUOTA-diversified top-k: the overall top-10 documents by length
-    * with AT MOST 2 per source — search-result diversification as a
-    * per-source window + one global re-rank over the quota survivors
-    * (a source-domain-bounded frame, never the corpus).
-    */
-  private def q343(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val perSrc = Window.partitionBy(col("source"))
-      .orderBy(col("n_chars").desc, col("doc_id"))
-    T(s, dir, "documents")
-      .select(col("doc_id"), col("source"), col("n_chars"))
-      .withColumn("src_rank", row_number().over(perSrc))
-      .filter(col("src_rank") <= 2)
-      .orderBy(col("n_chars").desc, col("doc_id"))
-      .limit(10)
-      .orderBy(col("doc_id"))
-  }
-
-  /** Quantile-sketch ERROR METER: q316's bottom-k estimates audited
-    * against their observed ranks in the full data — |rank(est) − q| per
-    * quantile, the "measured, not assumed" loop (q215 for ANN, q340 for
-    * dedup) closed for the sketch shelf; one broadcast of the 3-row
-    * estimate spine against a single corpus scan.
-    */
-  private def q344(s: SparkSession, dir: String): DataFrame = {
-    val sk = graft.operators.Sketches.quantileSketch(
-      T(s, dir, "events"),
-      expr("date_format(timestamp_seconds(ts div 1000000000), 'yyyy-MM-dd')"),
-      "event_id", "value", 256, Seq(0.5, 0.9, 0.99))
-    T(s, dir, "events").select(col("value").cast("double").as("v"))
-      .crossJoin(broadcast(sk))
-      .groupBy(col("quantile"), col("est"), col("n_total"))
-      .agg(sum(when(col("v") <= col("est"), 1L).otherwise(0L)).as("n_le"))
-      .select(col("quantile"), col("est"), col("n_le"), col("n_total"),
-        round(abs(col("n_le").cast("double") / col("n_total").cast("double") -
-          col("quantile")), 6).as("rank_error"))
-      .orderBy(col("quantile"))
-  }
-
-  /** DYNAMIC-GAP streaming sessionization
-    * ([[graft.streaming.StreamVerify.dynamicSessionsStream]]): built-in
-    * `session_window` with a PER-EVENT gap column (purchases hold 60
-    * minutes, others 30) — the last cell of the session-mode matrix;
-    * must equal the variable-end interval-union sweep.
-    */
-  private def q345(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.dynamicSessionsStream(s, eventsPath(dir))
-      .orderBy(col("user_id"), col("start_sec"))
-
-  /** SLO BURN-RATE alerting (the SRE multiwindow rule): hourly error
-    * share over a 1% error budget, 1h and trailing-6h burn rates, page
-    * when BOTH exceed (14.4 / 6) — fast detection without
-    * single-spike flapping; one hourly aggregate, windows over the
-    * hours-domain series.
-    */
-  private def q346(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val h = T(s, dir, "events")
-      .groupBy(expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg(count(lit(1)).as("total"),
-        sum(when(col("event_type") === "error", 1L).otherwise(0L)).as("errs"))
-    // one global hourly series — aggregate-scale by construction
-    val w6 = Window.orderBy(col("hid")).rowsBetween(-5, Window.currentRow)
-    def dbl(c: Column): Column = c.cast("double")
-    val b1 = dbl(col("errs")) / dbl(col("total")) / 0.01
-    val b6 = dbl(col("errs6")) / dbl(col("total6")) / 0.01
-    h.withColumn("errs6", sum(col("errs")).over(w6))
-      .withColumn("total6", sum(col("total")).over(w6))
-      .select(col("hid"), col("total"), col("errs"),
-        round(b1, 6).as("burn_1h"), round(b6, 6).as("burn_6h"),
-        (b1 > 14.4 && b6 > 6.0).cast("int").as("page"))
-      .orderBy(col("hid"))
-  }
-
-  /** SCHEMA-COMPATIBILITY audit
-    * ([[graft.operators.Reconcile.schemaCompat]]): the data-contract
-    * gate run BEFORE a producer deploy — per-field verdicts under the
-    * standard evolution rules (widening ok, drops/narrowing/new-required
-    * break), exercised over a schema pair covering every verdict class.
-    * Pure metadata; the oracle is the hand-derived verdict table.
-    */
-  private def q347(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    val oldS = StructType(Seq(
-      StructField("a", IntegerType), StructField("b", LongType),
-      StructField("c", StringType), StructField("d", DoubleType),
-      StructField("e", DecimalType(10, 2)), StructField("f", StringType),
-      StructField("i", StringType, nullable = true),
-      StructField("j", LongType, nullable = false)))
-    val newS = StructType(Seq(
-      StructField("a", LongType), StructField("b", LongType),
-      StructField("d", StringType), StructField("e", DecimalType(12, 2)),
-      StructField("f", StringType),
-      StructField("g", StringType, nullable = true),
-      StructField("h", LongType, nullable = false),
-      StructField("i", StringType, nullable = false),
-      StructField("j", LongType, nullable = true)))
-    graft.operators.Reconcile.schemaCompat(s, oldS, newS)
-      .orderBy(col("field"))
-  }
-
-  /** ORDER-INDEPENDENT table fingerprints
-    * ([[graft.operators.Reconcile.fingerprint]]): (count, XOR of 52-bit
-    * row hashes) per table — the cross-system "are these copies
-    * content-identical" handshake that ships two longs instead of a
-    * table; XOR commutes so partitioning/order/engine are invisible.
-    */
-  private def q348(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Reconcile
-    def cents(c: Column): Column =
-      (c.cast(DecimalType(18, 2)) * 100).cast("long")
-    def named(name: String, fp: DataFrame): DataFrame =
-      fp.select(lit(name).as("table_name"), col("n_rows"), col("xor_fp"))
-    named("customer", Reconcile.fingerprint(T(s, dir, "customer"),
-        Seq(col("c_custkey"), col("c_name"), col("c_mktsegment"))))
-      .unionByName(named("lineitem", Reconcile.fingerprint(T(s, dir, "lineitem"),
-        Seq(col("l_orderkey"), col("l_partkey"), cents(col("l_extendedprice"))))))
-      .unionByName(named("orders", Reconcile.fingerprint(T(s, dir, "orders"),
-        Seq(col("o_orderkey"), col("o_orderstatus"), cents(col("o_totalprice"))))))
-      .orderBy(col("table_name"))
-  }
-
-  /** Streaming INTERVAL-UNION maintenance
-    * ([[graft.streaming.StreamVerify.intervalUnionMaintenance]]): q334's
-    * activity spans kept current per micro-batch as exactly-once TxLake
-    * delta commits of already-merged spans (weights carry the source
-    * counts); union associativity makes the re-swept store equal the
-    * one-shot batch union row for row.
-    */
-  private def q349(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.intervalUnionMaintenance(
-        s, q259Events(s, dir), scratch(dir, "q349"), 600L)
-      .orderBy(col("user_id"), col("span_start"))
-
-  /** END-TO-END corpus-prep FUNNEL — the whole pre-training pipeline as
-    * ONE declarative plan with a per-stage audit: quality gates → bench
-    * exclusion → language gate → exact dedup (min-id per normalized
-    * text) → 4-gram DECONTAMINATION against the benchmark probes
-    * ([[graft.operators.TextPipeline.contamination]], strict-minority
-    * overlap) → per-language BALANCED downsample
-    * ([[graft.operators.Sampling.balancedDownsample]]). The emitted
-    * (stage, lang, n_docs) funnel is the report a data lead signs off
-    * on; every stage is an already-oracle-proven operator composed, and
-    * the whole funnel is itself hash-gated.
-    */
-  private def q350(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import graft.functions.TextFunctions
-    val raw = T(s, dir, "documents")
-    // One text pass annotates every doc with its funnel verdicts (stage
-    // unions otherwise re-derive the wordCount/md5 pipeline per branch —
-    // the corpus was parsed 4×); the checkpointed flag frame is slim
-    // (id, lang, two booleans, one md5), and each stage count below is a
-    // filter over it. Stage predicates are verbatim, so counts are
-    // row-identical to the chained-filter spelling.
-    val ann = raw.select(col("doc_id"), col("lang"),
-        (TextFunctions.wordCount(col("text")) >= 10 &&
-          col("n_chars") >= 50 && col("doc_id") % 97 =!= 0).as("ok1"),
-        md5(array_join(TextFunctions.words(col("text")), " ")).as("__k"))
-      .withColumn("ok2",
-        col("ok1") && col("lang").isin("en", "es", "fr"))
-      .localCheckpoint(true)
-    val s3 = ann.filter(col("ok2"))
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(col("__k")).orderBy(col("doc_id"))))
-      .filter(col("__rn") === 1)
-      .select(col("doc_id"), col("lang"))
-      .localCheckpoint(true)
-    // contamination needs the TEXT of the surviving + benchmark docs —
-    // the one remaining corpus pass (4-gram shingles), same input set as
-    // the chained spelling (s3 ∪ bench are disjoint: s1 excludes % 97)
-    val cont = graft.operators.TextPipeline.contamination(
-      raw.select(col("doc_id"), col("text"))
-        .join(s3.select(col("doc_id")), Seq("doc_id"), "left_semi")
-        .unionByName(raw.filter(col("doc_id") % 97 === 0)
-          .select(col("doc_id"), col("text"))),
-      col("doc_id") % 97 === 0, n = 4)
-    val s4 = s3.join(
-      cont.filter(col("n_hits") * 2 < col("n_shingles")).select(col("doc_id")),
-      Seq("doc_id"), "left_semi")
-      .localCheckpoint(true)
-    val s5 = graft.operators.Sampling.balancedDownsample(s4, "lang", "doc_id")
-    def stage(name: String, df: DataFrame): DataFrame =
-      df.groupBy(col("lang")).agg(count(lit(1)).as("n_docs"))
-        .select(lit(name).as("stage"), col("lang"), col("n_docs"))
-    stage("s0_raw", raw)
-      .unionByName(stage("s1_quality", ann.filter(col("ok1"))))
-      .unionByName(stage("s2_lang", ann.filter(col("ok2"))))
-      .unionByName(stage("s3_exact_dedup", s3))
-      .unionByName(stage("s4_decontaminated", s4))
-      .unionByName(stage("s5_balanced", s5))
-      .orderBy(col("stage"), col("lang"))
-  }
-
-  /** STREAMING SLO burn alerting
-    * ([[graft.streaming.StreamVerify.sloBurnStream]]): q346's
-    * multiwindow page rule on FINALIZED hours only — each hour's error
-    * share emits exactly once at watermark passage (append mode,
-    * sentinel-staged input); the trailing-6h baseline runs over the
-    * emitted stream. Must equal the batch burn table row for row.
-    */
-  private def q351(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.sloBurnStream(s, q92Events(s, dir))
-      .orderBy(col("hid"))
-
-  /** GROUPED quantile sketches
-    * ([[graft.operators.Sketches.quantileSketchGrouped]]): per-event-type
-    * bottom-k samples → per-type p50/p90/p99 — the per-tenant latency
-    * dashboard; all windows group-keyed, everything after the build is
-    * k·|groups|-sized.
-    */
-  private def q352(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sketches.quantileSketchGrouped(
-      T(s, dir, "events"), "event_type",
-      expr("date_format(timestamp_seconds(ts div 1000000000), 'yyyy-MM-dd')"),
-      "event_id", "value", 128, Seq(0.5, 0.9, 0.99))
-
-  /** LTTB downsampling ([[graft.operators.Trend.lttbPerKey]]): each
-    * event type's hourly series reduced to 20 shape-preserving points
-    * (largest-triangle-three-buckets) — the dashboard reducer that keeps
-    * peaks where striding drops them; the whole sequential selection is
-    * one HOF fold, replayed by a recursive CTE carrying the anchor.
-    */
-  private def q353(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("event_type"), expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("v"))
-    graft.operators.Trend.lttbPerKey(hourly, "event_type", "hid", "v", 20)
-      .orderBy(col("event_type"), col("idx"))
-  }
-
-  /** SQL-surface UNPIVOT → PIVOT round-trip: the wide customer metrics
-    * melted with the UNPIVOT keyword and immediately re-pivoted with
-    * PIVOT (MAX) — the reshaping keywords q16/q66 exercise through the
-    * DataFrame API, now proven at the SQL surface; the round trip is the
-    * identity, so the oracle is the plain projection.
-    */
-  private def q354(s: SparkSession, dir: String): DataFrame = {
-    T(s, dir, "customer").createOrReplaceTempView("customer_v354")
-    s.sql("""
-      SELECT * FROM (
-        SELECT c_custkey, metric, val FROM (
-          SELECT c_custkey, CAST(c_acctbal AS DOUBLE) AS balance,
-                 CAST(c_nationkey AS DOUBLE) AS nation
-          FROM customer_v354)
-        UNPIVOT (val FOR metric IN (balance, nation)))
-      PIVOT (MAX(val) FOR metric IN ('balance' AS balance, 'nation' AS nation))
-      ORDER BY c_custkey""")
-  }
-
-  /** d=2 HILBERT-CURVE layout ([[graft.operators.Layout.hilbertWrite]] /
-    * [[graft.plans.HilbertIndex2]]): orders clustered by the Hilbert index
-    * of (custkey, order-day) — the locality-preserving sibling of q81's
-    * Morton interleave. Every curve step is a unit grid move, so a file's
-    * contiguous index segment is a near-square tile with tighter min/max
-    * on BOTH keys than Morton's quadrant jumps allow; LayoutSpec measures
-    * the files-opened comparison on the same probe. The oracle replays
-    * the xy2d rotation loop bit-for-bit as a list_reduce fold.
-    */
-  private def q355(s: SparkSession, dir: String): DataFrame = {
-    val path = scratch(dir, "q355")
-    val withDims = T(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"),
-        datediff(col("o_orderdate"), lit("1992-01-01").cast("date")).cast("long")
-          .as("day_nr"))
-    // bits=12: day_nr tops out under 4096 at every SF and the packed
-    // oracle replay needs 4*bits <= 62; higher custkeys mask like zorder
-    graft.operators.Layout.hilbertWrite(withDims, path, "o_custkey", "day_nr",
-      bits = 12)
-    PartitionedLake.read(s, path)
-      .select(col("o_orderkey"), col("o_custkey"), col("day_nr"),
-        graft.operators.Layout.hilbertValue(col("o_custkey"), col("day_nr"), 12)
-          .as("hval"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** Per-file SKETCH-STORE stats in the TxLake log
-    * ([[graft.sources.TxLake.SketchSpec]] /
-    * [[graft.sources.TxLake.sketchQuantiles]]): every commit persists a
-    * bottom-256 (h, id, v) sample of `value` beside its min/max stats —
-    * the schema-level "sketch column" a lakehouse stats system keeps —
-    * and p50/p90/p99 then answer FROM THE LOG ALONE, zero data files
-    * opened (TxLakeSpec deletes the data directory and still answers;
-    * the q212 proof shape), carried intact through a checkpoint.
-    * Bottom-k merges exactly, so the metadata answer is bit-identical
-    * to q316's corpus sketch at the same k; oracle = the global
-    * bottom-256 replay.
-    */
-  private def q356(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLake
-    val lake = scratch(dir, "q356")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val ev = T(s, dir, "events").select(col("event_id"), col("value"))
-    (0 to 3).foreach(i => TxLake.commit(s, lake,
-      ev.filter(pmod(col("event_id"), lit(4)) === i).coalesce(2),
-      sketch = Some(TxLake.SketchSpec("event_id", "value", 256))))
-    TxLake.checkpoint(lake)
-    TxLake.sketchQuantiles(s, lake, "value", Seq(0.5, 0.9, 0.99))
-  }
-
-  /** MMR DIVERSIFIED re-ranking ([[graft.operators.Similarity.mmrRerank]]):
-    * each query's top-24 cosine candidates greedily reduced to 8 by
-    * `0.7·rel − 0.3·max-sim-to-selected` — the redundancy-penalized
-    * shelf relevance-only ranking (q26/q209) can't express. The whole
-    * sequential selection runs inside one row per query (the q353
-    * nested-HOF-fold pattern); scores live on the 4-decimal grid where
-    * VecCosine and pcos are bit-equal, and the oracle replays the greedy
-    * walk as a recursive CTE carrying the selected list.
-    */
-  private def q357(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    graft.operators.Similarity.mmrRerank(
-      emb, emb.filter(col("vec_id") < 5), "vec_id", "embedding",
-      m = 24, k = 8, lamRel = 0.7, lamDiv = 0.3)
-  }
-
-  /** OPTIMIZE + HILBERT through the log
-    * ([[graft.sources.TxLake.optimizeHilbert]]): q184's atomic-rewrite
-    * proof shape with the locality-preserving curve — four
-    * hash-scattered commits become one Hilbert-clustered snapshot with
-    * named stats on both keys, then a two-predicate pruned read + exact
-    * filter answers the same aggregate. The curve value is layout-only
-    * (dropped before write), so the oracle is the plain filtered
-    * aggregate — identical to q184's, proving layout never changes
-    * answers, only file-skip rates (LayoutSpec measures those).
-    */
-  private def q358(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q358")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val o = T(s, dir, "orders").select(
-      col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-      col("o_orderstatus"))
-    (0 to 3).foreach(i => TxLake.commit(s, lake,
-      o.filter(pmod(col("o_orderkey"), lit(4)) === i).coalesce(1),
-      statsCols = Seq("o_custkey", "o_orderkey")))
-    TxLake.optimizeHilbert(s, lake, "o_custkey", "o_orderkey", bits = 16)
-    val r = o.agg(max(col("o_custkey")), max(col("o_orderkey"))).head()
-    val (ct, ot) = (r.getLong(0) / 8, r.getLong(1) / 8)
-    TxLake.readPrunedBy(s, lake,
-      Seq(("o_custkey", 1L, ct), ("o_orderkey", 1L, ot)))
-      .filter(col("o_custkey").between(1L, ct) &&
-        col("o_orderkey").between(1L, ot))
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"), sumx(col("o_totalprice")).as("total_price"))
-      .orderBy(col("o_orderstatus"))
-  }
-
-  /** LAGGED CROSS-CORRELATION ([[graft.operators.Trend.crossCorr]]):
-    * Pearson r between hourly view counts and purchase counts at lags
-    * −3..+3 — the lead/lag detector q255's autocorrelation can't see
-    * (it correlates a series only with itself). Hour-domain frame, lag
-    * spine broadcast, sums exact in DECIMAL(38,0), one pinned-order
-    * double finish per lag.
-    */
-  private def q360(s: SparkSession, dir: String): DataFrame = {
-    val h = T(s, dir, "events")
-      .groupBy(expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg(sum(when(col("event_type") === "view", 1L).otherwise(0L)).as("x"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("y"))
-    graft.operators.Trend.crossCorr(h, "hid", "x", "y", -3 to 3)
-  }
-
-  /** ROLLING-ORIGIN Holt BACKTEST
-    * ([[graft.operators.Trend.holtBacktestPerKey]]): at every hour t ≥ 3
-    * the pre-update (level, trend) state forecasts the hour's value;
-    * |error| and sMAPE terms accumulate inside the same sequential fold
-    * (double-sum order pinned to series order, replayed term-for-term by
-    * the recursive-CTE oracle). The "should I trust q261's forecaster on
-    * this series" report, per event type.
-    */
-  private def q361(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("event_type"), expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .cast("double").as("v"))
-    graft.operators.Trend.holtBacktestPerKey(
-        hourly, "event_type", "hid", "v", 0.5, 0.5)
-      .orderBy(col("event_type"))
-  }
-
-  /** WELCH'S t-TEST ([[graft.operators.Drift.welchTTest]]): view-event
-    * value cents vs click-event value cents — the unequal-variance mean
-    * test beside q283's proportion z-test and q319's rank test; both
-    * slices' moments from one conditional pass, sums exact in
-    * DECIMAL(38,0), t and Welch–Satterthwaite df in pinned-order
-    * doubles.
-    */
-  private def q362(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .filter(col("event_type").isin("view", "click"))
-      .select((col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-          .as("cents"),
-        (col("event_type") === "view").as("isa"))
-    graft.operators.Drift.welchTTest(ev, "cents", col("isa"))
-  }
-
-  /** CLAMPED RUNNING BALANCE ([[graft.operators.Relational.clampedBalance]]):
-    * per-supplier on-hand stock under receipts (+qty) and returns (−qty)
-    * clamped to [0, 500] — the inventory fold no window can express
-    * (each step depends on the CLAMPED previous value, not the raw
-    * prefix sum); shortage and overflow hits counted in the same
-    * sequential HOF fold, replayed exactly by the recursive-CTE oracle.
-    */
-  private def q363(s: SparkSession, dir: String): DataFrame = {
-    val li = T(s, dir, "lineitem").select(col("l_suppkey"),
-      (col("l_orderkey") * 8 + col("l_linenumber")).as("seq"),
-      when(col("l_returnflag") === "R", -col("l_quantity").cast("long"))
-        .otherwise(col("l_quantity").cast("long")).as("delta"))
-    graft.operators.Relational.clampedBalance(li, "l_suppkey", "seq",
-        "delta", cap = 500L)
-      .orderBy(col("l_suppkey"))
-  }
-
-  /** EXACT-CENTS PRORATION ([[graft.operators.Relational.prorateCents]]):
-    * each order's 10% discount (integer cents) split across its line
-    * items proportionally to extended price, floors reconciled by
-    * largest remainder so every order's allocations SUM EXACTLY to its
-    * discount — the invoice requirement a double multiply silently
-    * violates. Remainders compare as exact integers; zero floating
-    * point anywhere.
-    */
-  private def q364(s: SparkSession, dir: String): DataFrame = {
-    val li = T(s, dir, "lineitem").select(col("l_orderkey"),
-      (col("l_orderkey") * 8 + col("l_linenumber")).as("line_id"),
-      (col("l_extendedprice").cast(DecimalType(18, 2)) * 100).cast("long")
-        .as("w"))
-    val o = T(s, dir, "orders").select(col("o_orderkey"),
-      expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) div 10")
-        .as("disc"))
-    val j = li.join(o, col("l_orderkey") === col("o_orderkey"))
-      .select(col("l_orderkey"), col("line_id"), col("w"), col("disc"))
-    graft.operators.Relational.prorateCents(j, "l_orderkey", "line_id",
-        "w", "disc")
-      .orderBy(col("l_orderkey"), col("line_id"))
-  }
-
-  /** t-CLOSENESS audit ([[graft.operators.Privacy.tCloseness]]): per
-    * market segment, the ordered-EMD between the segment's account-
-    * balance-decile distribution and the global one — the attack q322's
-    * l-diversity misses (a diverse class can still sit entirely in the
-    * top deciles). Densities on the 1e-9 grid, cumulative differences
-    * exact in DECIMAL, one double finish.
-    */
-  private def q365(s: SparkSession, dir: String): DataFrame = {
-    val c = T(s, dir, "customer").select(col("c_mktsegment"),
-      floor((col("c_acctbal").cast(DecimalType(18, 2)) * 100).cast("long") /
-        lit(100000.0)).cast("long").as("bal_decile"))
-    graft.operators.Privacy.tCloseness(c, Seq("c_mktsegment"),
-        "bal_decile", t = 0.2)
-      .orderBy(col("c_mktsegment"))
-  }
-
-  /** EXACT pairwise AUDIENCE OVERLAP
-    * ([[graft.operators.Sketches.bitmapOverlap]]): shared users between
-    * every pair of event types from the bitmap store — facts scanned
-    * once into word cells, each pair answered by popcount(AND) over the
-    * word-aligned cell join; exact, the precision companion to q260's
-    * KMV estimate. Oracle is the semantic COUNT-DISTINCT pair join
-    * (the q177 posture: the bitmap is the mechanism, not the meaning).
-    */
-  private def q366(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sketches.bitmapOverlap(
-      T(s, dir, "events"), "event_type", "user_id")
-
-  /** BORŮVKA minimum spanning forest
-    * ([[graft.operators.Graph.minimumSpanningForest]]): every component
-    * picks its cheapest outgoing edge simultaneously — O(log n) rounds
-    * of joins, the MST shape that survives 1000 executors (Kruskal's
-    * global sort and Prim's one-at-a-time frontier do not). Graph:
-    * supplier ranks 1..N chained at deltas {1,2,5,11} (connected by
-    * construction) with md5-derived DISTINCT weights, so the MST is
-    * unique and the oracle — a sequential PRIM replay as a recursive
-    * CTE carrying the visited list — must produce the identical edge
-    * set, two utterly different algorithms agreeing edge-for-edge.
-    */
-  private def q367(s: SparkSession, dir: String): DataFrame = {
-    val ranks = T(s, dir, "supplier")
-      .select(row_number().over(Window.orderBy(col("s_suppkey")))
-        .cast("long").as("r"))
-    val mx = ranks.agg(max(col("r"))).head().getLong(0)
-    val d = s.createDataFrame(Seq(1L, 2L, 5L, 11L).map(Tuple1(_))).toDF("d")
-    val edges = ranks.crossJoin(broadcast(d))
-      .filter(col("r") + col("d") <= mx)
-      .select(col("r").as("src"), (col("r") + col("d")).as("dst"))
-      .withColumn("w", conv(substring(md5(concat_ws(":",
-        col("src"), col("dst"))), 1, 13), 16, 10).cast("long"))
-    graft.operators.Graph.minimumSpanningForest(edges)
-      .orderBy(col("src"), col("dst"))
-  }
-
-  /** FOREIGN-KEY DISCOVERY ([[graft.operators.Profiling.fkContainment]]):
-    * inclusion-dependency profiles for five candidate child→parent column
-    * pairs — four true FKs and one deliberate non-FK (orderkey ⊄
-    * custkey) — the join-graph inference audit for an undocumented lake;
-    * each pair costs two distinct-aggregates and a key-domain join,
-    * never a fact×fact join.
-    */
-  private def q368(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Profiling.fkContainment(Seq(
-      ("lineitem.l_orderkey->orders.o_orderkey",
-        T(s, dir, "lineitem"), "l_orderkey", T(s, dir, "orders"), "o_orderkey"),
-      ("lineitem.l_partkey->part.p_partkey",
-        T(s, dir, "lineitem"), "l_partkey", T(s, dir, "part"), "p_partkey"),
-      ("orders.o_custkey->customer.c_custkey",
-        T(s, dir, "orders"), "o_custkey", T(s, dir, "customer"), "c_custkey"),
-      ("customer.c_nationkey->nation.n_nationkey",
-        T(s, dir, "customer"), "c_nationkey", T(s, dir, "nation"), "n_nationkey"),
-      ("orders.o_orderkey->customer.c_custkey",
-        T(s, dir, "orders"), "o_orderkey", T(s, dir, "customer"), "c_custkey")))
-      .orderBy(col("candidate"))
-
-  /** OFF-POLICY REPLAY evaluation
-    * ([[graft.operators.Features.policyReplay]]): a deterministic
-    * hash-rule policy scored against the logged event stream by the
-    * replay method — keep rows where the logged action equals the
-    * policy's choice, average their reward cents exactly, report beside
-    * the logged baseline. The offline bandit readout before an online
-    * A/B.
-    */
-  private def q369(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(col("user_id"), col("event_type"),
-      (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
-    graft.operators.Features.policyReplay(ev, "user_id", "event_type",
-      "cents", Seq("view", "click", "purchase", "signup", "error"))
-  }
-
-  /** MAXIMUM DRAWDOWN per supplier
-    * ([[graft.operators.Trend.maxDrawdown]]): deepest peak-to-trough fall
-    * of each supplier's line-price series in exact cents — two
-    * key-partitioned window/aggregate shuffles, zero sequential state.
-    * The order is pinned to (shipdate, orderkey, linenumber, cents)
-    * because this synthetic lineitem carries duplicate
-    * (orderkey, linenumber) pairs — the q363 lesson.
-    */
-  private def q370(s: SparkSession, dir: String): DataFrame = {
-    val li = T(s, dir, "lineitem").select(col("l_suppkey"),
-      col("l_shipdate").as("t"), col("l_orderkey").as("ok"),
-      col("l_linenumber").cast("long").as("ln"),
-      (col("l_extendedprice").cast(DecimalType(18, 2)) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Trend.maxDrawdown(li, "l_suppkey",
-      Seq("t", "ok", "ln", "cents"), "cents").orderBy(col("l_suppkey"))
-  }
-
-  /** INVERSE-PROPENSITY off-policy evaluation
-    * ([[graft.operators.Features.ipsEval]]): q369's replay estimator
-    * reweighted by the EMPIRICAL logging distribution — IPS and the
-    * self-normalized SNIPS side by side; all mass collapses to the
-    * action domain in one map-side-combined pass, per-action terms on
-    * the 1e-6 decimal grid.
-    */
-  private def q371(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(col("user_id"), col("event_type"),
-      (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("cents"))
-    graft.operators.Features.ipsEval(ev, "user_id", "event_type", "cents",
-      Seq("view", "click", "purchase", "signup", "error"))
-  }
-
-  /** ADAMIC–ADAR link prediction ([[graft.operators.Graph.adamicAdar]])
-    * over the part–order bipartite graph: parts sharing orders score
-    * Σ 1/ln(order's part count) — common-neighbor evidence discounted by
-    * connector promiscuity. Pairs form per order (degree ≤ 8 capped,
-    * the LSH-band-cap posture), weights on the 1e-9 decimal grid,
-    * co-support ≥ 2 keeps the answer answer-sized.
-    */
-  private def q372(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Graph.adamicAdar(
-      T(s, dir, "lineitem").select(col("l_partkey"), col("l_orderkey")),
-      "l_partkey", "l_orderkey", minShared = 2, maxDegree = 8)
-      .orderBy(col("n1"), col("n2"))
-
-  /** KRUSKAL–WALLIS H ([[graft.operators.Drift.kruskalWallis]]): does
-    * any order-priority class price systematically higher — the k-group
-    * rank test beside q319's two-sample Mann–Whitney, on the same
-    * value-domain rank formulation (no global per-row sort).
-    */
-  private def q373(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.kruskalWallis(T(s, dir, "orders"),
-      "o_totalprice", "o_orderpriority").orderBy(col("g"))
-
-  /** 1-D KALMAN local-level filter per user
-    * ([[graft.operators.Trend.kalmanLevelPerKey]]) over hourly spend —
-    * the uncertainty-aware smoother beside q261's Holt: adaptive gain,
-    * posterior variance in the answer. q=0.25, r=1.0 (powers of two);
-    * oracle replays the recursion as a recursive CTE carrying (x, P).
-    */
-  private def q374(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("user_id"), expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .cast("double").as("v"))
-    graft.operators.Trend.kalmanLevelPerKey(hourly, "user_id", "hid", "v",
-      qVar = 0.25, rVar = 1.0).orderBy(col("user_id"))
-  }
-
-  /** CLASSICAL ADDITIVE DECOMPOSITION
-    * ([[graft.operators.Trend.maDecompose]]) of the global hourly event
-    * count into trend (centered 2×24 MA) + daily seasonal indices +
-    * remainder — the "growing vs just cycling" splitter; bucket-domain
-    * frame, exact integers to the single grid division.
-    */
-  private def q375(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg(count(lit(1)).as("c"))
-    graft.operators.Trend.maDecompose(hourly, "hid", "c", period = 24)
-      .orderBy(col("t"))
-  }
-
-  /** SCD VALIDITY-WINDOW AUDIT
-    * ([[graft.operators.Relational.validityAudit]]): overlap/gap/empty
-    * census per customer over deterministic [from, to) windows derived
-    * from order dates (to = from + 1 + orderkey mod 40, so both defect
-    * classes actually occur) — classified against the running max of
-    * previous ends, the q334 sweep posture.
-    */
-  private def q376(s: SparkSession, dir: String): DataFrame = {
-    val iv = T(s, dir, "orders").select(col("o_custkey"),
-        col("o_orderkey").as("ok"),
-        datediff(col("o_orderdate").cast("date"),
-          to_date(lit("1992-01-01"))).cast("long").as("from_day"))
-      .withColumn("to_day",
-        col("from_day") + lit(1L) + pmod(col("ok"), lit(40L)))
-    graft.operators.Relational.validityAudit(iv, "o_custkey",
-      "from_day", "to_day", Seq("ok")).orderBy(col("o_custkey"))
-  }
-
-  /** GOOD–TURING unseen mass per language
-    * ([[graft.operators.TextPipeline.goodTuring]]): singleton mass N₁/N
-    * as the expected never-seen-type share of the next token — the
-    * no-vocab coverage-risk ranking beside q262's fixed-vocab OOV rate.
-    */
-  private def q377(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.goodTuring(T(s, dir, "documents"), "lang")
-      .orderBy(col("lang"))
-
-  /** CONSISTENT-HASH ring routing
-    * ([[graft.operators.Sharding.ringAssign]]): customers assigned to 8
-    * shards × 40 vnodes; per-shard load report. The ring is metadata-
-    * sized and broadcast — routing is a map-side array scan, zero
-    * shuffles; ShardingSpec proves the consistency property (removing a
-    * shard moves ONLY its own keys).
-    */
-  private def q378(s: SparkSession, dir: String): DataFrame = {
-    val shards = (0 until 8).map(i => "shard-" + i)
-    graft.operators.Sharding
-      .ringAssign(T(s, dir, "customer"), "c_custkey", shards, vnodes = 40)
-      .groupBy(col("shard"))
-      .agg(count(lit(1)).as("n_keys"))
-      .withColumn("pct", round(col("n_keys").cast("double") /
-        sum(col("n_keys")).over(Window.partitionBy()).cast("double"), 6))
-      .orderBy(col("shard"))
-  }
-
-  /** REPLAYABLE HyperLogLog ([[graft.operators.Sketches.hllRegisters]] /
-    * hllEstimate): register-level HLL whose every register and estimate
-    * hash-matches cross-engine — the exact-oracle upgrade of the q37/
-    * q119 family (whose built-in HLL++ internals are rows-only
-    * checkable). Per event_type plus the '(all)' row MERGED from the
-    * per-type registers (max per bucket) — the mergeability proof — with
-    * exact distincts and relative error beside each estimate.
-    */
-  private def q379(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-    val perType =
-      graft.operators.Sketches.hllRegisters(ev, "event_type", "user_id")
-    val merged = perType.groupBy(col("j")).agg(max(col("m")).as("m"))
-      .withColumn("g", lit("(all)")).select("g", "j", "m")
-    val est = graft.operators.Sketches.hllEstimate(
-      perType.unionByName(merged))
-    val exact = ev.groupBy(col("event_type").as("g"))
-      .agg(count_distinct(col("user_id")).as("n_exact"))
-      .unionByName(ev.agg(count_distinct(col("user_id")).as("n_exact"))
-        .withColumn("g", lit("(all)")).select("g", "n_exact"))
-    est.join(exact, "g")
-      .withColumn("rel_error",
-        round((col("estimate") - col("n_exact").cast("double")) /
-          col("n_exact").cast("double"), 6))
-      .orderBy(col("g"))
-  }
-
-  /** MAX-MIN FAIR allocation ([[graft.operators.Relational.waterfill]]):
-    * each order's capacity (60% of total quantity) split across its
-    * lines by water-filling — small demands met in full, the rest split
-    * evenly with largest-remainder integer cents; duplicate
-    * (orderkey, linenumber) pairs collapse in the demand census first
-    * (the q363 duplicate-pair lesson).
-    */
-  private def q380(s: SparkSession, dir: String): DataFrame = {
-    val li = T(s, dir, "lineitem")
-      .groupBy(col("l_orderkey"), col("l_linenumber").cast("long")
-        .as("l_linenumber"))
-      .agg(sum(col("l_quantity").cast("long")).as("demand"))
-      .withColumn("cap",
-        expr("(sum(demand) over (partition by l_orderkey) * 3) div 5"))
-    graft.operators.Relational.waterfill(li, "l_orderkey", "l_linenumber",
-        "demand", "cap")
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-  }
-
-  /** STREAMING HyperLogLog maintenance
-    * ([[graft.streaming.StreamVerify.hllMaintenance]]): micro-batches
-    * land their register MAXes as exactly-once lake commits; MAX
-    * commutes and is idempotent, so the merged store equals the
-    * whole-corpus sketch and q379's oracle replays it — batch
-    * boundaries must be invisible.
-    */
-  private def q381(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.hllMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q381"))
-
-  /** RENDEZVOUS (HRW) routing
-    * ([[graft.operators.Sharding.rendezvousAssign]]): argmax-of-hashes
-    * routing beside q378's ring — no vnodes, perfect expected balance,
-    * same minimal-movement law (ShardingSpec proves it); one row-local
-    * array expression, zero shuffles.
-    */
-  private def q382(s: SparkSession, dir: String): DataFrame = {
-    val shards = (0 until 8).map(i => "shard-" + i)
-    graft.operators.Sharding
-      .rendezvousAssign(T(s, dir, "customer"), "c_custkey", shards)
-      .groupBy(col("shard"))
-      .agg(count(lit(1)).as("n_keys"))
-      .withColumn("pct", round(col("n_keys").cast("double") /
-        sum(col("n_keys")).over(Window.partitionBy()).cast("double"), 6))
-      .orderBy(col("shard"))
-  }
-
-  /** HILL TAIL-INDEX ([[graft.operators.Trend.hillTailIndex]]) of the
-    * order-price distribution from the top-101 order statistics — "is
-    * this tail power-law-heavy enough that sums are giant-dominated";
-    * the distributional companion to q277's Zipf rank fit.
-    */
-  private def q383(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.hillTailIndex(
-      T(s, dir, "orders").select(
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long")
-          .as("cents")),
-      "cents", k = 100)
-
-  /** GCRA RATE-LIMIT AUDIT
-    * ([[graft.operators.Relational.rateLimitAudit]]): replay each user's
-    * event stream against a 1-per-60s limiter with burst 4 and report
-    * would-be allowed/rejected counts — the offline capacity-planning
-    * readout; all integer seconds, recursive-CTE oracle.
-    */
-  private def q384(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(col("user_id"),
-      expr("ts div 1000000000").as("tsec"), col("event_id"))
-    graft.operators.Relational.rateLimitAudit(ev, "user_id", "tsec",
-      "event_id", emissionSec = 60L, burst = 4).orderBy(col("user_id"))
-  }
-
-  /** STREAMING sliding-HLL maintenance
-    * ([[graft.streaming.StreamVerify.slidingHllMaintenance]]): the
-    * (bucket, ρ, max-ts) cell store maintained by exactly-once
-    * commits — MAX over ts commutes so batching is invisible; the
-    * drained store answers q399's two suffix windows on the
-    * epoch-second axis.
-    */
-  private def q410(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.slidingHllMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q410"))
-
-  /** THEIL T decomposition ([[graft.operators.Drift.theilIndex]]):
-    * order-price inequality split additively into between-priority and
-    * within-priority components — the decomposition the Gini (q338)
-    * cannot give; exact-input doubles, grid terms, O(1) outputs.
-    */
-  private def q411(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders").select(col("o_orderpriority"),
-      (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Drift.theilIndex(o, "cents", "o_orderpriority")
-      .orderBy(col("g"))
-  }
-
-  /** SPRT per user ([[graft.operators.Drift.sprt]]): Wald's sequential
-    * test walking each user's event stream for purchase-rate
-    * H1 p=0.25 vs H0 p=0.15 with ±ln(19) boundaries — the early-stopping
-    * monitor without the peeking problem; first crossing by struct-min.
-    */
-  private def q412(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(col("user_id"),
-      expr("ts div 1000000000").as("tsec"), col("event_id"),
-      col("event_type"))
-    graft.operators.Drift.sprt(ev, "user_id", Seq("tsec", "event_id"),
-      col("event_type") === "purchase", p0 = 0.15, p1 = 0.25,
-      alphaInv = 19.0).orderBy(col("user_id"))
-  }
-
-  /** 4-truss ([[graft.operators.Graph.kTruss]]) of the raw part
-    * co-occurrence graph (parts sharing an order): the maximal subgraph
-    * where every EDGE closes >= 2 triangles — the edge-level community
-    * extraction beside q224's node-level k-core (q162's support cut
-    * would leave this graph triangle-starved at sf0.01; the truss IS
-    * the structural noise filter here, peeling one-off co-occurrences
-    * that never triangulate). Peeling is monotone, so the oracle's
-    * fixed 8-round unroll is exact for any graph that stabilizes within
-    * it (this one takes 3); Spark detects the fixpoint by edge count
-    * and reports support inside the truss.
-    */
-  private def q413(s: SparkSession, dir: String): DataFrame = {
-    // pairs via one per-order item array + double explode: one shuffle
-    // of (ok, pk) rows instead of the self-join's two (measured 12 s →
-    // 4.5 s at sf0.1; order baskets are small, so the n² explode per
-    // basket is bounded)
-    val edges = T(s, dir, "lineitem")
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .groupBy(col("ok"))
-      .agg(collect_set(col("pk")).as("ps"))
-      .select(explode(col("ps")).as("src"), col("ps"))
-      .select(col("src"), explode(col("ps")).as("dst"))
-      .filter(col("src") < col("dst"))
-    // no distinct here: kTruss canonicalizes + dedups its input anyway,
-    // so a second shuffle of the raw pair stream would be pure waste
-    graft.operators.Graph.kTruss(edges, k = 4)
-      .orderBy(col("a"), col("b"))
-  }
-
-  /** Kneser–Ney bigram scoring
-    * ([[graft.operators.TextPipeline.knBigram]]): q231's raw-MLE
-    * surprisal upgraded to the standard smoothed LM — absolute discount
-    * 0.75 with the continuation-count back-off, all inputs exact
-    * integer censuses of the bigram-type domain, one pinned double
-    * probability per transition on the 1e-9 grid.
-    */
-  private def q414(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.knBigram(
-      T(s, dir, "documents"), "doc_id", "text")
-      .orderBy(col("doc_id"))
-
-  /** Absorbing-Markov funnel metrics
-    * ([[graft.operators.Attribution.absorbingMetrics]]): q281's journey
-    * matrix (truncation at first purchase, start/conv/drop sentinels)
-    * read through the fundamental matrix instead of removal effects —
-    * per transient state, expected steps to absorption and the
-    * conv/drop absorption split, as an 8-round bounded geometric series
-    * in pure int64 p9/st6 arithmetic replayed bit for bit by the
-    * oracle's unrolled CTE chain.
-    */
-  private def q415(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "events").select(col("user_id"), col("event_type"),
-      expr("ts div 1000000000").as("sec"), col("event_id"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("sec"), col("event_id"))
-    val o = e.withColumn("rn", row_number().over(w))
-    val fp = o.filter(col("event_type") === "purchase")
-      .groupBy(col("user_id")).agg(min(col("rn")).as("prn"))
-    val p = o.join(fp, Seq("user_id"), "left")
-      .filter(col("prn").isNull || col("rn") <= col("prn"))
-      .select(col("user_id"), col("event_type"), col("rn"))
-    val w2 = Window.partitionBy(col("user_id")).orderBy(col("rn"))
-    val steps = p.withColumn("nxt", lead(col("event_type"), 1).over(w2))
-      .select(col("event_type").as("src"),
-        when(col("nxt").isNotNull, col("nxt"))
-          .when(col("event_type") =!= "purchase", lit("drop"))
-          .otherwise(lit(null)).as("dst"))
-      .filter(col("dst").isNotNull)
-    val starts = p.filter(col("rn") === 1)
-      .select(lit("start").as("src"), col("event_type").as("dst"))
-    val tr = starts.unionByName(steps)
-      .withColumn("dst",
-        when(col("dst") === "purchase", "conv").otherwise(col("dst")))
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n"))
-    graft.operators.Attribution.absorbingMetrics(tr,
-        Seq("click", "signup", "view", "error"), steps = 8)
-      .orderBy(col("state"))
-  }
-
-  /** Quantile normalization
-    * ([[graft.operators.Features.quantileNormalize]]): order totals
-    * (cents) per priority class mapped onto the POOLED distribution's
-    * order statistic at the same scaled rank — after it every priority
-    * class shares one price distribution (the cross-segment score
-    * calibrator). Ranks are key-partitioned windows; the pooled
-    * cumulative census runs through GlobalOrder.prefixSums (no
-    * single-partition window); the rank→value lookup is the q57
-    * bucketized containment join.
-    */
-  private def q416(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders").select(col("o_orderpriority").as("pri"),
-      col("o_orderkey"),
-      (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Features.quantileNormalize(
-        o, "pri", "o_orderkey", "cents", bucketSize = 1024L)
-      .select(col("id").as("o_orderkey"), col("g").as("pri"),
-        col("v").as("cents"), col("v_norm"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** STREAMING SRM maintenance
-    * ([[graft.streaming.StreamVerify.srmMaintenance]]): per-batch
-    * distinct (arm, unit) assignments land as exactly-once lake
-    * commits; distinct-union makes batch boundaries invisible, so the
-    * drained store's χ² gate is bit-equal to q390's batch readout —
-    * the experimentation stack's first self-maintaining stats surface.
-    */
-  private def q417(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.srmMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q417"))
-
-  /** Phonetic blocking census ([[graft.plans.PhoneticKey]]): every part
-    * name keyed by the pinned Soundex-family walk (one codegen byte
-    * loop), then the blocking census — parts and distinct names per
-    * phonetic bucket. The sounds-alike upgrade of q143/q396's prefix
-    * blocking; the oracle replays the walk as a letters-only char
-    * unnest + one LAG over the H/W-filtered sequence.
-    */
-  /** BH-FDR over a per-nation Welch z family
-    * ([[graft.operators.Drift.bhFdr]]): each nation's customer balances
-    * tested against the rest (exact DECIMAL moments, pinned Welch z),
-    * p-values through the pinned A&S 26.2.17 tail polynomial
-    * ([[graft.operators.Drift.normalTailP2]]) onto the 1e-9 grid, then
-    * the step-up rule over the 25-hypothesis family — the
-    * multiple-testing gate the per-key test shelf needs before anyone
-    * reads 25 "significant" nations off 25 raw p-values.
-    */
-  private def q420(s: SparkSession, dir: String): DataFrame = {
-    val d38 = DecimalType(38, 0)
-    val c = T(s, dir, "customer")
-      .join(T(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name"),
-        (col("c_acctbal").cast(DecimalType(12, 2)) * 100).cast("long")
-          .as("cents"))
-    val cts = col("cents").cast(d38)
-    val g = c.groupBy(col("n_name")).agg(count(lit(1)).as("na"),
-      sum(cts).as("sa"), sum(cts * cts).as("saa"))
-    val t = c.agg(count(lit(1)).as("nt"), sum(cts).as("st"),
-      sum(cts * cts).as("stt"))
-    def dbl(x: Column): Column = x.cast("double")
-    val j = g.crossJoin(broadcast(t)).select(col("n_name"), col("na"),
-      dbl(col("sa")).as("saD"), dbl(col("saa")).as("saaD"),
-      (col("nt") - col("na")).as("nb"),
-      dbl(col("st") - col("sa")).as("sbD"),
-      dbl(col("stt") - col("saa")).as("sbbD"))
-    val na = dbl(col("na"))
-    val nb = dbl(col("nb"))
-    val va = (na * col("saaD") - col("saD") * col("saD")) /
-      (na * (na - 1.0))
-    val vb = (nb * col("sbbD") - col("sbD") * col("sbD")) /
-      (nb * (nb - 1.0))
-    val z = (col("saD") / na - col("sbD") / nb) / sqrt(va / na + vb / nb)
-    val withP = j.select(col("n_name"), round(z, 6).as("zr"),
-      round(graft.operators.Drift.normalTailP2(z), 9).as("p"))
-    graft.operators.Drift
-      .bhFdr(withP.select(col("n_name"), col("p")), "n_name", "p", 0.05)
-      .join(withP.select(col("n_name").as("k"), col("zr")), Seq("k"))
-      .select(col("k").as("nation"), col("zr").as("z"), col("p"),
-        col("p_rank"), col("bh_crit"), col("rejected"))
-      .orderBy(col("p_rank"))
-  }
-
-  /** Mann–Kendall trend test ([[graft.operators.Trend.mannKendall]])
-    * over each event type's daily-count series: the nonparametric
-    * monotone-trend screen (exact integer S, tie-corrected variance,
-    * continuity-corrected Z) beside q147's parametric OLS slope.
-    */
-  private def q421(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .select(col("event_type"), expr("(ts div 1000000000) div 86400").as("day"))
-      .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("cnt"))
-    graft.operators.Trend.mannKendall(ev, "event_type", "day", "cnt")
-      .select(col("k").as("event_type"), col("n"), col("s"),
-        col("var_s"), col("z"))
-      .orderBy(col("event_type"))
-  }
-
-  /** STREAMING CONFORMAL maintenance
-    * ([[graft.streaming.StreamVerify.conformalMaintenance]]):
-    * micro-batches land partial (group, split, value) censuses as
-    * exactly-once commits; counts add, so the drained
-    * split-conformal report equals batch q397 bit for bit — calibrated
-    * uncertainty as a self-maintaining ingestion surface.
-    */
-  private def q422(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.conformalMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q422"))
-
-  /** Streaming Welch-t maintenance
-    * ([[graft.streaming.StreamVerify.welchMaintenance]]): q362's
-    * two-sample test kept current as an ingestion side effect — per-batch
-    * (isa, n, Σx, Σx²) moment partials land as exactly-once lake
-    * commits; moments ADD, so the drained readout is bit-equal to the
-    * batch test and shares its oracle verbatim. Third self-maintaining
-    * experimentation surface beside q417 (SRM) and q422 (conformal).
-    */
-  private def q433(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.welchMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q433"))
-
-  /** TextRank keyword extraction (Mihalcea–Tarau 2004 shape): PageRank
-    * ([[graft.operators.Graph.pageRank]]) over the ADJACENCY
-    * co-occurrence graph — consecutive word pairs, canonicalized and
-    * support-thresholded (≥3) so one-off juxtapositions drop — then the
-    * top-30 centrality words. Pure composition: q231's tokenization,
-    * q162's threshold posture, q100's 3-iteration gridded PageRank; no
-    * POS filter (no NLP runtime), so function words rank too — the
-    * honest unfiltered TextRank.
-    */
-  private def q423(s: SparkSession, dir: String): DataFrame = {
-    val words = T(s, dir, "documents").select(col("doc_id"),
-      posexplode(split(regexp_replace(lower(trim(col("text"))), "\\s+", " "),
-        " ")).as(Seq("pos", "w")))
-    val adj = words
-      .withColumn("prev", lag(col("w"), 1).over(
-        Window.partitionBy(col("doc_id")).orderBy(col("pos"))))
-      .filter(col("prev").isNotNull && col("prev") =!= col("w"))
-      .select(least(col("prev"), col("w")).as("a"),
-        greatest(col("prev"), col("w")).as("b"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
-      .filter(col("c") >= 3)
-    val edges = adj.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(adj.select(col("b").as("src"), col("a").as("dst")))
-    graft.operators.Graph.pageRank(edges, iters = 3)
-      .select(col("node").as("word"), col("pr"))
-      .orderBy(col("pr").desc, col("word")).limit(30)
-  }
-
-  /** Kendall τ-b ([[graft.operators.Relational.kendallTauB]]) between
-    * line quantity and line number — exact concordant/discordant pair
-    * counts on the (quantity × linenumber) cell census with both tie
-    * corrections; the discrete-domain rank correlation beside q271's
-    * Spearman.
-    */
-  private def q424(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.kendallTauB(
-      T(s, dir, "lineitem").select(col("l_quantity"), col("l_linenumber")),
-      "l_quantity", "l_linenumber")
-
-  /** Cramér's V ([[graft.operators.Relational.cramersV]]) for order
-    * status × priority — the normalized-χ² association on [0,1]
-    * completing q256's mutual information on the same pair; FULL R×C
-    * spine so empty cells pay their expected-count term.
-    */
-  private def q425(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.cramersV(
-      T(s, dir, "orders").select(col("o_orderstatus"), col("o_orderpriority")),
-      "o_orderstatus", "o_orderpriority")
-      .orderBy(col("x"), col("y"))
-
-  /** Cochran–Armitage trend test
-    * ([[graft.operators.Drift.cochranArmitage]]): does the fulfilled
-    * rate TREND across $50k order-price buckets — the ordered
-    * alternative q408's ANOVA wastes power on; exact integer moments,
-    * one pinned Z.
-    */
-  private def q426(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.cochranArmitage(
-      T(s, dir, "orders").select(
-        expr("least(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) div 5000000, 9)")
-          .as("bucket"),
-        col("o_orderstatus")),
-      "bucket", col("o_orderstatus") === "F")
-      .orderBy(col("score"))
-
-  /** Stable supplier→nation assignment
-    * ([[graft.operators.Sharding.stableMatch]]): synchronized
-    * Gale–Shapley deferred acceptance over md5-derived two-sided
-    * preferences, capacity ⌈S/N⌉+1 per nation — the both-sides-have-
-    * preferences allocation beside q378/q382's hash placement. The
-    * oracle unrolls 10 proposal rounds (fixpoint at 3 at sf0.01;
-    * post-fixpoint rounds are no-ops); Spark detects convergence by
-    * the rejection count.
-    */
-  private def q427(s: SparkSession, dir: String): DataFrame = {
-    val sup = T(s, dir, "supplier").select(col("s_suppkey").as("agent"))
-    val nat = T(s, dir, "nation").select(col("n_nationkey").as("target"))
-    val nS = sup.count()
-    val nN = nat.count()
-    val cap = ((nS + nN - 1) / nN + 1).toInt
-    def h(salt: String): Column = conv(substring(md5(concat(lit(salt + ":"),
-      col("agent").cast("string"), lit(":"), col("target").cast("string"))
-      .cast("binary")), 1, 13), 16, 10).cast("long")
-    val spine = sup.crossJoin(broadcast(nat))
-      .withColumn("a_rank", row_number().over(
-        Window.partitionBy(col("agent")).orderBy(h("gs1"), col("target")))
-        .cast("long"))
-      .withColumn("t_score", h("gs2"))
-    graft.operators.Sharding.stableMatch(spine, cap)
-      .select(col("agent").as("s_suppkey"),
-        col("target").as("n_nationkey"), col("a_rank"))
-      .orderBy(col("s_suppkey"))
-  }
-
-  /** Brown–Forsythe variance-homogeneity test
-    * ([[graft.operators.Drift.brownForsythe]]): do the order-priority
-    * groups share a price SPREAD — the dispersion gate q408's ANOVA
-    * (same grouping) assumes away; median-centered |x − med_g| by exact
-    * census order statistics, then the one-way F on the deviations.
-    */
-  private def q428(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.brownForsythe(
-      T(s, dir, "orders").select(
-        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-          .as("cents"),
-        col("o_orderpriority")),
-      "cents", "o_orderpriority")
-      .orderBy(col("g"))
-
-  /** Ljung–Box portmanteau test ([[graft.operators.Trend.ljungBoxPerKey]])
-    * over each event type's hourly volume series, lags 1..6 — "is there
-    * ANY serial structure left", the whiteness gate q255's single-lag
-    * ACF can't aggregate; cross-multiplied integer autocorrelations,
-    * per-lag terms on the 1e-9 grid, one pinned Q per key.
-    */
-  private def q429(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("event_type"), expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Trend.ljungBoxPerKey(
-        hourly, "event_type", "hid", "cents", maxLag = 6)
-      .orderBy(col("event_type"))
-  }
-
-  /** Friedman complete-block rank test ([[graft.operators.Drift.friedman]]):
-    * do event TYPES differ in daily volume once the day itself (the
-    * block) is ranked out — the within-block sibling of q373's
-    * Kruskal–Wallis, immune to day-level level shifts that would pollute
-    * a pooled ranking; (day × type) spine zero-filled so blocks are
-    * complete, doubled-rank integer arithmetic to one pinned χ².
-    */
-  private def q430(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "events")
-      .select(expr("(ts div 1000000000) div 86400").as("day"), col("event_type"))
-    val counts = e.groupBy(col("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    val spine = e.select(col("day")).distinct()
-      .crossJoin(broadcast(e.select(col("event_type")).distinct()))
-    val full = spine.join(counts, Seq("day", "event_type"), "left")
-      .select(col("day"), col("event_type"),
-        coalesce(col("n"), lit(0L)).as("n"))
-    graft.operators.Drift.friedman(full, "day", "event_type", "n")
-      .orderBy(col("j"))
-  }
-
-  /** Retrieval evaluation ([[graft.operators.Similarity.rankingMetrics]]):
-    * NDCG@10 / MAP@10 / MRR per query over the exact cosine top-10 with
-    * same-label binary relevance — the metrics half the vector shelf
-    * (q26 knn, q209 RRF, q357 MMR) needs before anyone tunes it. DCG
-    * discounts and IDCG prefix sums are pinned 12-decimal literals (no
-    * libm log either engine); per-rank terms quantized to DECIMAL(18,12)
-    * before the order-independent sums.
-    */
-  private def q431(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    graft.operators.Similarity.rankingMetrics(
-        emb, emb.filter(col("vec_id") < 8), "vec_id", "embedding", "label",
-        k = 10)
-      .orderBy(col("qid"))
-  }
-
-  /** Temperature-scaled mixing table
-    * ([[graft.operators.Sampling.temperatureMixing]]): per-language
-    * sampling weights pᵢ ∝ √tokensᵢ over the documents corpus with a
-    * 1M-token budget — the α = 0.5 multilingual up-sampling recipe;
-    * √tokens is IEEE-exact on both engines, weights summed as decimals,
-    * per-group effective epochs flag over-sampling.
-    */
-  private def q432(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.temperatureMixing(
-      T(s, dir, "documents").select(col("lang"),
-        graft.functions.TextFunctions.wordCount(col("text")).as("tokens")),
-      "lang", "tokens", tokenBudget = 1000000L)
-      .orderBy(col("g"))
-
-  /** RAKE keyword extraction
-    * ([[graft.operators.TextPipeline.rakeKeywords]]): top-20 candidate
-    * PHRASES (maximal stopword-free runs) scored by Σ degree/frequency
-    * of their words — the collocation-aware phrase ranker beside q423's
-    * single-word TextRank; stopword island segmentation per doc,
-    * word-domain stats, 1e-9-grid word scores decimal-summed per phrase.
-    */
-  private def q434(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.rakeKeywords(
-      T(s, dir, "documents"), "doc_id", "text", topN = 20)
-      .orderBy(col("rank"))
-
-  /** Jonckheere–Terpstra ordered-alternative test
-    * ([[graft.operators.Drift.jonckheereTerpstra]]): does line QUANTITY
-    * trend with order PRIORITY (1-URGENT … 5-LOW) — the
-    * continuous-response sibling of q426's Cochran–Armitage; exact 2J
-    * from the (priority, quantity) cell census, tie-corrected variance
-    * from pure integer censuses, one pinned Z.
-    */
-  private def q435(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.jonckheereTerpstra(
-      T(s, dir, "lineitem").join(T(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)")
-            .as("prio"),
-          col("l_quantity").cast("long").as("qty")),
-      "prio", "qty")
-      .orderBy(col("g"))
-
-  /** Spend-concentration report
-    * ([[graft.operators.Relational.concentration]]): Gini, HHI and CR4
-    * of per-customer spend within each nation — the inequality figures
-    * beside q411's Theil decomposition; Gini's rank term from doubled
-    * census ranks (pure integers), HHI/CR4 exact, one pinned division
-    * each.
-    */
-  private def q436(s: SparkSession, dir: String): DataFrame = {
-    val spend = T(s, dir, "orders").join(T(s, dir, "customer"),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_nationkey"), col("c_custkey"))
-      .agg(expr(
-        "CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)")
-        .as("cents"))
-    graft.operators.Relational.concentration(spend, "c_nationkey", "cents")
-      .orderBy(col("g"))
-  }
-
-  /** Cochran's Q ([[graft.operators.Drift.cochranQ]]): do event TYPES
-    * differ in their day-level "above the day's average volume" flag —
-    * the paired-binary k-treatment test completing q409's McNemar the
-    * way q430's Friedman completes Kruskal–Wallis; zero-filled
-    * (day × type) spine, the flag is the exact integer compare
-    * n·k > day_total, Q from pure integer census sums.
-    */
-  private def q437(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "events")
-      .select(expr("(ts div 1000000000) div 86400").as("day"),
-        col("event_type"))
-    val counts = e.groupBy(col("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    val spine = e.select(col("day")).distinct()
-      .crossJoin(broadcast(e.select(col("event_type")).distinct()))
-    val full = spine.join(counts, Seq("day", "event_type"), "left")
-      .select(col("day"), col("event_type"),
-        coalesce(col("n"), lit(0L)).as("n"))
-    val wd = Window.partitionBy(col("day"))
-    val flagged = full
-      .withColumn("k", count(lit(1)).over(wd))
-      .withColumn("tot", sum(col("n")).over(wd))
-      .select(col("day"), col("event_type"),
-        (col("n") * col("k") > col("tot")).as("above"))
-    graft.operators.Drift.cochranQ(flagged, "day", "event_type",
-        col("above"))
-      .orderBy(col("j"))
-  }
-
-  /** Page–Hinkley drift monitor ([[graft.operators.Trend.pageHinkley]])
-    * over each event type's hourly volume — the reference-free
-    * mean-shift detector beside q248's known-level CUSUM: per-step
-    * deviations from the RUNNING mean on the 1e-9 grid, exact decimal
-    * cumulative/min folds, alarm at λ = $1000 of hourly lift.
-    */
-  private def q438(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("event_type"),
-        expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Trend.pageHinkley(
-        hourly, "event_type", "hid", "cents",
-        deltaCents = 0.0, lambdaCents = 100000.0)
-      .orderBy(col("event_type"))
-  }
-
-  /** Group-sequential monitoring
-    * ([[graft.operators.Drift.groupSequential]]): the view-vs-click
-    * value test evaluated at three interim time looks against pinned
-    * O'Brien–Fleming-style boundaries (3.471/2.454/2.004) — peeking
-    * discipline the plain q362 z-gate lacks; one conditional-moment
-    * pass for all looks, the stop decision broadcast.
-    */
-  private def q472(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.groupSequential(
-      T(s, dir, "events").filter(col("event_type").isin("view", "click"))
-        .select((col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-            .as("cents"),
-          (col("event_type") === "view").as("isa"),
-          expr("ts div 1000000000").as("sec")),
-      "cents", col("isa"), col("sec"),
-      boundaries = Seq(3.471, 2.454, 2.004))
-      .orderBy(col("look"))
-
-  /** Tukey-fences outlier report ([[graft.operators.Profiling.tukeyFences]]):
-    * the boxplot census per priority — exact Q1/Q3 order stats,
-    * 1.5·IQR fences (exact in double over cents), outside counts; the
-    * skew-safe outlier reading a z-score report gets wrong.
-    */
-  private def q473(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Profiling.tukeyFences(
-      T(s, dir, "orders").select(col("o_orderpriority"),
-        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-          .as("cents")),
-      "o_orderpriority", "cents")
-      .orderBy(col("g"))
-
-  /** Skewness / excess kurtosis ([[graft.operators.Relational.skewKurtosis]]):
-    * per-priority Fisher g1 and excess g2 over order cents — the shape
-    * moments that decide whether q83's mean±stddev summary is even
-    * meaningful; exact DECIMAL(38,0) power sums, one pinned finish
-    * (m2·√m2, never libm pow).
-    */
-  private def q476(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.skewKurtosis(
-      T(s, dir, "orders").select(col("o_orderpriority"),
-        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-          .as("cents")),
-      "o_orderpriority", "cents")
-      .orderBy(col("g"))
-
-  /** Bartlett variance homogeneity ([[graft.operators.Drift.bartlett]]):
-    * do the priorities share a variance — the parametric sibling of
-    * q428's Brown–Forsythe and the admissibility gate for any
-    * pooled-variance readout; grid-summed cross-group reductions, only
-    * O(1)-magnitude statistics leave.
-    */
-  private def q477(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.bartlett(
-      T(s, dir, "orders").select(col("o_orderpriority"),
-        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-          .as("cents")),
-      "o_orderpriority", "cents")
-
-  /** Two-sample Anderson–Darling ([[graft.operators.Relational.andersonDarling]]):
-    * purchase-funnel value distributions view vs click, tail-weighted —
-    * completes the two-sample family (q385 KS supremum, q470 CvM
-    * integral, q393 energy distance) with the member that catches tail
-    * divergence first.
-    */
-  private def q478(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.andersonDarling(
-      T(s, dir, "events").filter(col("event_type").isin("view", "click"))
-        .select((col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-            .as("cents"),
-          (col("event_type") === "view").as("isa")),
-      "cents", col("isa"))
-
-  /** Gopher rule gate ([[graft.operators.TextPipeline.gopherRules]]):
-    * the composite MassiveText heuristic battery — mean word length
-    * band, alphabetic-word share, symbol ratio, 2-of-8 stopwords —
-    * plus the pass/fail verdict, all as row-local array expressions.
-    */
-  private def q482(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.gopherRules(
-      T(s, dir, "documents"), "doc_id", "text")
-      .orderBy(col("doc_id"))
-
-  /** Panel harmonic centrality ([[graft.operators.Graph.multiSourceHarmonic]]):
-    * Σ 1/d within 4 hops over the customer↔supplier bipartite graph for
-    * an 8-customer panel — k sources ride ONE shared BFS lattice (one
-    * edge join per hop total), the bounded centrality form beside
-    * q190's single-source hop map.
-    */
-  private def q483(s: SparkSession, dir: String): DataFrame = {
-    val pairs = T(s, dir, "lineitem")
-      .join(T(s, dir, "orders"),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .distinct()
-    val edges = pairs.select(col("cust").as("src"), (-col("supp")).as("dst"))
-      .unionByName(pairs.select((-col("supp")).as("src"),
-        col("cust").as("dst")))
-    val sources = T(s, dir, "customer").filter(col("c_custkey") <= 8)
-      .select(col("c_custkey").as("node"))
-    graft.operators.Graph.multiSourceHarmonic(edges, sources, maxHops = 4)
-      .orderBy(col("src"))
-  }
-
-  /** Theta-method forecast ([[graft.operators.Trend.thetaPerKey]]): the
-    * M3-winning SES-with-drift — OLS theta-0 line + SES-smoothed
-    * theta-2 line, equal-weight one-step combination — per user over
-    * hourly spend; beside q147 (pure OLS) and q261 (Holt).
-    */
-  private def q484(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("user_id"), expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Trend.thetaPerKey(hourly, "user_id", "hid", "cents")
-      .orderBy(col("user_id"))
-  }
-
-  /** DSIR importance weights ([[graft.operators.TextPipeline.dsirWeights]]):
-    * every document scored by how much more likely its hashed-unigram
-    * profile is under the English target slice than under the raw
-    * corpus — the importance-resampling data-selection score (hashed
-    * n-gram DSIR) beside the rule gates; 64 hash buckets, add-one
-    * smoothing, log-ratios on exact integer cross-products.
-    */
-  private def q479(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.dsirWeights(
-      T(s, dir, "documents"), "doc_id", "text", col("lang") === "en", 64)
-      .orderBy(col("doc_id"))
-
-  /** Streaming PSI maintenance
-    * ([[graft.streaming.StreamVerify.psiMaintenance]]): q109's
-    * population-stability report as an ingestion side effect — bin
-    * edges pinned from the reference scan, per-batch (bin, n_act,
-    * n_ref) censuses land exactly-once, counts add, the drained store
-    * reads through psiFromCensus and shares q109's oracle verbatim.
-    * Seventh self-maintaining surface.
-    */
-  private def q480(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.psiMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q480"))
-
-  /** Orphan-file GC ([[graft.sources.TxLake.orphanFiles]] /
-    * [[graft.sources.TxLake.gcOrphans]]): a crashed writer lands data
-    * files but never fills its reservation — bytes no snapshot can
-    * reach. The audit lists them (disk walk minus every entry's adds,
-    * metadata-only), GC reclaims them, and the snapshot is provably
-    * untouched. Readout: counts before/after + orphan row mass +
-    * surviving snapshot rows.
-    */
-  private def q481(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLake
-    graft.sources.LocalFs.deleteRecursively(scratch(dir, "q481"))
-    val lake = scratch(dir, "q481") + "/t"
-    val o = T(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 2 === 0).repartition(3))
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 2 === 1).repartition(3))
-    // crashed writer: data landed under the next version dir, reservation
-    // never filled — exactly the abandonPending residue
-    val vNext = TxLake.latestVersion(lake) + 1
-    o.filter(col("o_orderkey") % 97 === 0).coalesce(1)
-      .write.mode("overwrite").parquet(s"$lake/data/v$vNext")
-    o.filter(col("o_orderkey") % 89 === 0).coalesce(1)
-      .write.mode("append").parquet(s"$lake/data/v$vNext")
-    val orphans = TxLake.orphanFiles(lake)
-    val orphanRows =
-      if (orphans.isEmpty) 0L else s.read.parquet(orphans: _*).count()
-    val removed = TxLake.gcOrphans(lake)
-    val after = TxLake.orphanFiles(lake).size
-    val snapRows = TxLake.readSnapshot(s, lake).count()
-    import s.implicits._
-    Seq((orphans.size.toLong, orphanRows, removed.size.toLong,
-      after.toLong, snapRows))
-      .toDF("n_orphans", "orphan_rows", "n_removed", "n_after",
-        "snapshot_rows")
-  }
-
-  /** Multi-iteration BPE trainer ([[graft.operators.TextPipeline.bpeTrain]]):
-    * 8 rounds of count-pairs → argmax → merge-everywhere over the
-    * distinct-word table — the ordered merge list a BPE tokenizer ships,
-    * where q157 stops after round one's statistics. The oracle unrolls
-    * the identical 8 rounds (census → LIMIT 1 argmax → literal replace on
-    * the delimited symbol string) as MATERIALIZED CTEs.
-    */
-  private def q475(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.bpeTrain(T(s, dir, "documents"), "text", 8)
-      .orderBy(col("rank"))
-
-  /** ANN recall sweep ([[graft.operators.Similarity.recallSweep]]):
-    * brute-force exact top-10 over the 10-query sample as ground truth;
-    * 2-band LSH and IVF at nProbe ∈ {1,2,4} each scored by corpus-wide
-    * recall@10 — the measured index-quality table the §2.4 family's
-    * speed/recall trade rests on. The IVF clustering runs ONCE for the
-    * whole sweep; every retrieval and the exact hit counts replay in the
-    * oracle, so the recall numbers themselves are hash-exact.
-    */
-  private def q474(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    graft.operators.Similarity.recallSweep(emb,
-      emb.filter(col("vec_id") < 10), "vec_id", "embedding", 64,
-      k = 10, nCentroids = 16, probes = Seq(1, 2, 4))
-  }
-
-  /** Wilcoxon signed-rank test ([[graft.operators.Drift
-    * .wilcoxonSignedRank]]): per-customer paired yearly spend (1996 vs
-    * 1995) — did customer totals systematically move year-over-year,
-    * the paired rank test beside q319's two-sample Mann–Whitney and
-    * q362's parametric Welch; |d| ranks from the value-domain census,
-    * doubled-rank/tie sums exact in DECIMAL(38,0), pinned z.
-    */
-  private def q485(s: SparkSession, dir: String): DataFrame = {
-    val y = T(s, dir, "orders")
-      .filter(year(col("o_orderdate")).isin(1995, 1996))
-      .groupBy(col("o_custkey").as("k"), year(col("o_orderdate")).as("yr"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("cents"))
-    val a = y.filter(col("yr") === 1996).select(col("k"), col("cents").as("a"))
-    val b = y.filter(col("yr") === 1995).select(col("k"), col("cents").as("b"))
-    graft.operators.Drift.wilcoxonSignedRank(a.join(b, "k"), "a", "b")
-  }
-
-  /** Streaming Benford maintenance
-    * ([[graft.streaming.StreamVerify.benfordMaintenance]]): q291's
-    * leading-digit forensic as an ingestion side effect — each
-    * micro-batch commits its ≤9-row (digit, n) census exactly-once,
-    * counts add, the drained store reads through benfordFromCensus and
-    * replays the batch oracle shape over events.value. Eighth
-    * self-maintaining surface.
-    */
-  private def q486(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.benfordMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q486"))
-
-  /** Hampel filter ([[graft.operators.Trend.hampelPerKey]]): per-user
-    * hourly spend despiked by the centered 7-point rolling median —
-    * outlier iff |x − med| > 3·1.4826·MAD (pinned 4.4478), the robust
-    * gate q253's EWMA and q300's z-band can't give on heavy tails;
-    * exact integer order statistics inside one key-partitioned window.
-    */
-  private def q487(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("user_id"), expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Trend.hampelPerKey(hourly, "user_id", "hid", "cents")
-      .withColumnRenamed("v", "cents")
-      .orderBy(col("user_id"), col("hid"))
-  }
-
-  /** Neyman allocation ([[graft.operators.Sampling.neymanAllocation]]):
-    * the variance-optimal stratified sampling plan — 500 samples split
-    * across order priorities ∝ N_h·S_h by the largest-remainder rule;
-    * exact integer micro-share arithmetic, allocations sum to the
-    * budget exactly.
-    */
-  private def q488(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.neymanAllocation(
-      T(s, dir, "orders").select(col("o_orderpriority"),
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents")),
-      "o_orderpriority", "cents", budget = 500L)
-      .orderBy(col("stratum"))
-
-  /** Clustering-depth audit ([[graft.operators.Layout.clusterDepthAudit]]):
-    * the same orders laid out two ways — md5-hash-bucketed (unclustered)
-    * vs key-range-bucketed (clustered) into 8 files each — then judged
-    * from per-file [min,max] stats alone: overlapping file pairs and the
-    * max overlap depth a point lookup pays. The range layout must read
-    * 1 file where the hash layout reads all 8 — the measured argument
-    * for q81/q164's layout writers.
-    */
-  private def q489(s: SparkSession, dir: String): DataFrame = {
-    val k0 = T(s, dir, "orders").select(col("o_orderkey").cast("long").as("k"))
-    val maxk = k0.agg(max(col("k"))).head().getLong(0) // one pinned scalar
-    val width = maxk / 8 + 1
-    val hashed = k0.select(lit("hash").as("layout"),
-      (conv(substring(md5(col("k").cast("string")), 1, 13), 16, 10)
-        .cast("long") % 8).as("file_id"), col("k"))
-    val ranged = k0.select(lit("range").as("layout"),
-      expr(s"(k - 1) div $width").as("file_id"), col("k"))
-    val stats = hashed.unionByName(ranged)
-      .groupBy(col("layout"), col("file_id"))
-      .agg(min(col("k")).as("mn"), max(col("k")).as("mx"))
-    graft.operators.Layout.clusterDepthAudit(stats).orderBy(col("layout"))
-  }
-
-  /** Ansari–Bradley dispersion test ([[graft.operators.Drift
-    * .ansariBradley]]): are urgent orders' totals more spread than
-    * low-priority ones — the rank test for SCALE beside q428's
-    * Brown–Forsythe (parametric-robust) and q477's Bartlett
-    * (parametric); tie-robust doubled score sums from the value-domain
-    * census, exact without-replacement variance.
-    */
-  private def q490(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.ansariBradley(
-      T(s, dir, "orders")
-        .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-        .select((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"), col("o_orderpriority")),
-      "cents", col("o_orderpriority") === "1-URGENT")
-
-  /** Top movers ([[graft.operators.Drift.topMovers]]): the 10 users whose
-    * event volume shifted most between the first and second half of the
-    * time range — period-over-period "heavy changers" via the map-side
-    * bounded TopK aggregator (≤k rows per partition cross the shuffle,
-    * never the user domain).
-    */
-  private def q491(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(col("user_id"), evSec.as("sec"))
-    val pin = ev.agg(min(col("sec")), max(col("sec"))).head()
-    val cutoff = (pin.getLong(0) + pin.getLong(1)) / 2 // pinned midpoint
-    graft.operators.Drift.topMovers(ev, "user_id",
-      col("sec") >= cutoff, k = 10)
-      .orderBy(col("rank"))
-  }
-
-  /** Tokenizer fertility ([[graft.operators.TextPipeline
-    * .tokenizerFertility]]): per-language BPE-tokens-per-word and
-    * chars-per-token with the exact p90 of per-document fertility —
-    * the tokenizer-choice audit; integer micro-ratios in the census,
-    * order-statistic p90, pinned corpus ratios.
-    */
-  private def q492(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.tokenizerFertility(
-      T(s, dir, "documents"), "lang", "text")
-      .orderBy(col("lang"))
-
-  /** Bipartiteness audit ([[graft.operators.Graph.bipartiteCheck]]): a
-    * 60-component lattice of alternating 5-cycles (odd → NOT bipartite)
-    * and 6-cycles (even → bipartite) derived from part keys — per
-    * component the encoded-state min-propagation labels every node with
-    * (root, shortest-hop parity) and odd cycles surface as same-parity
-    * edges; the 2-colorability gate an identity-resolution graph runs
-    * before trusting "customer vs account" sides.
-    */
-  private def q493(s: SparkSession, dir: String): DataFrame = {
-    val gi = T(s, dir, "part")
-      .filter(col("p_partkey") <= 480)
-      .select((col("p_partkey").cast("long") - 1L).as("k0"))
-      .select(expr("k0 div 8").as("g"), expr("k0 % 8").as("i"))
-      .withColumn("c", when(col("g") % 2 === 0, 5L).otherwise(6L))
-    val edges = gi.filter(col("i") < col("c"))
-      .select((col("g") * 8L + col("i")).as("src"),
-        (col("g") * 8L + (col("i") + 1L) % col("c")).as("dst"))
-    graft.operators.Graph.bipartiteCheck(edges, rounds = 8)
-      .orderBy(col("root"))
-  }
-
-  /** Blocking-recall meter: the "measured, not assumed" loop (q215 ANN,
-    * q340 minhash, q474 recall sweep) closed for the LINKAGE shelf —
-    * truth = Jaro-Winkler ≥ 0.95 over a capped broadcast record sample
-    * (300 clean + 300 transposed-suffix copies), candidates from TWO
-    * blocking schemes: an 8-char prefix block (misses the dirty pairs
-    * whose transposition crosses the prefix boundary) and q243's
-    * sorted-neighborhood window (w=4). Per scheme: candidate volume,
-    * precision, recall — the table that decides a blocking config
-    * before anyone trusts it at 100 TB.
-    */
-  private def q494(s: SparkSession, dir: String): DataFrame = {
-    import graft.plans.StringSimilarityExpressions.jaroWinkler
-    val cust = T(s, dir, "customer").filter(col("c_custkey") < 300)
-    val clean = cust.select(col("c_custkey").cast("long").as("rid"),
-      col("c_name").as("name"))
-    val dirty = cust.select((col("c_custkey") + 1000000L).as("rid"),
-      concat(expr("substring(c_name, 1, length(c_name) - 2)"),
-        expr("substring(c_name, length(c_name), 1)"),
-        expr("substring(c_name, length(c_name) - 1, 1)")).as("name"))
-    val recs = clean.unionByName(dirty).localCheckpoint(true)
-    val truth = recs.select(col("rid").as("id_a"), col("name").as("na"))
-      .join(broadcast(recs.select(col("rid").as("id_b"), col("name").as("nb"))),
-        col("id_a") < col("id_b"))
-      .filter(jaroWinkler(col("na"), col("nb")) >= 0.95)
-      .select(col("id_a"), col("id_b"), lit(1L).as("t"))
-      .localCheckpoint(true)
-    def meter(method: String, cand: DataFrame): DataFrame =
-      truth.join(cand.withColumn("c", lit(1L)), Seq("id_a", "id_b"), "full")
-        .agg(sum(col("t")).as("n_truth"), sum(col("c")).as("n_cand"),
-          sum(col("t") * col("c")).as("n_hit"))
-        .select(lit(method).as("method"), col("n_truth"), col("n_cand"),
-          col("n_hit"),
-          round(col("n_hit").cast("double") / col("n_cand").cast("double"), 6)
-            .as("precision"),
-          round(col("n_hit").cast("double") / col("n_truth").cast("double"), 6)
-            .as("recall"))
-    val pb = recs.select(col("rid"), substring(col("name"), 10, 8).as("blk"))
-    val prefixCand = pb.select(col("rid").as("id_a"), col("blk"))
-      .join(pb.select(col("rid").as("id_b"), col("blk")), Seq("blk"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b")).distinct()
-    val ranked = graft.operators.GlobalOrder.rowNumbers(
-      recs, Seq(col("name"), col("rid")), idCol = "rnk")
-    val blocked = ranked.select(col("rid"), col("rnk"),
-      explode(array(floor((col("rnk") - 1) / 4),
-        floor((col("rnk") - 1) / 4) + 1)).as("blk"))
-    val snCand = blocked.as("a").join(blocked.as("b"),
-        col("a.blk") === col("b.blk") && col("b.rnk") > col("a.rnk") &&
-          col("b.rnk") - col("a.rnk") <= 4)
-      .select(least(col("a.rid"), col("b.rid")).as("id_a"),
-        greatest(col("a.rid"), col("b.rid")).as("id_b"))
-      .distinct()
-    meter("prefix8", prefixCand)
-      .unionByName(meter("sn4", snCand))
-      .orderBy(col("method"))
-  }
-
-  /** Partial correlation ([[graft.operators.Relational.partialCorr]]):
-    * order total vs line count with quantity partialled out — the
-    * confounder screen over q457's raw correlations; one exact-moment
-    * pass, grid-rounded pairwise r's, pinned partial formula.
-    */
-  private def q495(s: SparkSession, dir: String): DataFrame = {
-    val per = T(s, dir, "lineitem")
-      .groupBy(col("l_orderkey"))
-      .agg((sum(col("l_extendedprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("x"),
-        count(lit(1)).as("y"),
-        sum(floor(col("l_quantity")).cast("long")).as("z"))
-    graft.operators.Relational.partialCorr(per, "x", "y", "z")
-  }
-
-  /** Delta-method ratio z-test ([[graft.operators.Drift.ratioDeltaZ]]):
-    * value-per-event between two md5-split user arms, tested the
-    * statistically correct way for a ratio metric — per-UNIT numerator/
-    * denominator moments, delta-method variance (covariance term
-    * included), never a per-row t-test.
-    */
-  private def q496(s: SparkSession, dir: String): DataFrame = {
-    val units = T(s, dir, "events")
-      .groupBy(col("user_id"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("x"), count(lit(1)).as("y"))
-      .withColumn("arm",
-        pmod(conv(substring(md5(concat(lit("ratio1:"),
-          col("user_id").cast("string"))), 1, 13), 16, 10).cast("long"),
-          lit(2)))
-    graft.operators.Drift.ratioDeltaZ(units, "x", "y", col("arm") === 0)
-  }
-
-  /** Streaming top-movers maintenance
-    * ([[graft.streaming.StreamVerify.topMoversMaintenance]]): q491's
-    * heavy-changers monitor as an ingestion side effect — pinned period
-    * cutoff, per-batch (key, n_prev, n_curr) censuses land exactly-once,
-    * counts add, the drained store reads through topMoversFromCensus
-    * and shares q491's oracle verbatim. Ninth self-maintaining surface.
-    */
-  private def q497(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.topMoversMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q497"))
-
-  /** LangID confusion matrix ([[graft.operators.TextPipeline
-    * .langidConfusion]]): q30's n-gram language gate measured against
-    * the labeled `lang` column — confusion cells, per-label share, and
-    * the global accuracy; the audit that catches a gate silently
-    * starving a language slice.
-    */
-  private def q498(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.langidConfusion(
-      T(s, dir, "documents"), "lang", "text")
-      .orderBy(col("label"), col("pred"))
-
-  /** Dunn post-hoc test ([[graft.operators.Drift.dunnTest]]): WHICH
-    * order priorities differ in totals after q373's Kruskal–Wallis says
-    * "some do" — all pairwise mean-rank gaps over the POOLED ranking,
-    * tie-corrected σ, A&S tail p-values, BH step-up over the 10-pair
-    * family.
-    */
-  private def q499(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.dunnTest(
-      T(s, dir, "orders").select(col("o_orderpriority"),
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents")),
-      "cents", "o_orderpriority")
-      .orderBy(col("p_rank"))
-
-  /** Personalized PageRank ([[graft.operators.Graph
-    * .personalizedPageRank]]): importance relative to a 4-customer
-    * source panel over the customer↔supplier bipartite graph — the
-    * teleport floor lands only on the sources, so the ranking answers
-    * "what matters to THESE customers" where q100 answers "overall".
-    */
-  private def q500(s: SparkSession, dir: String): DataFrame = {
-    val pairs = T(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
-      .join(T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .distinct()
-    val edges = pairs.select(col("cust").as("src"), (-col("supp")).as("dst"))
-      .unionByName(pairs.select((-col("supp")).as("src"), col("cust").as("dst")))
-    val sources = T(s, dir, "customer").filter(col("c_custkey") <= 4)
-      .select(col("c_custkey").as("node"))
-    graft.operators.Graph.personalizedPageRank(edges, sources, iters = 3)
-      .orderBy(col("ppr").desc, col("node"))
-      .limit(100)
-  }
-
-  /** Dominant period ([[graft.operators.Trend.dominantPeriodPerKey]]):
-    * per event type, the hourly-lag (2..24) with the strongest
-    * autocorrelation — the periodicity screen run before fitting a
-    * seasonal model with a guessed season length; argmax over q255's
-    * exact-moment ACF grid.
-    */
-  private def q501(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("event_type"), expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Trend.dominantPeriodPerKey(
-        hourly, "event_type", "hid", "cents", maxLag = 24)
-      .orderBy(col("event_type"))
-  }
-
-  /** Heterogeneous-treatment-effect z-test ([[graft.operators.Drift
-    * .hteZTest]]): does the md5-split arm effect on event value DIFFER
-    * between view and click events — the interaction readout that
-    * catches segment-opposite effects hiding behind a flat global
-    * q362; one conditional-moment pass over the four cells.
-    */
-  private def q502(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .filter(col("event_type").isin("view", "click"))
-      .select((col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-        .as("cents"), col("event_type"), col("user_id"))
-      .withColumn("arm",
-        pmod(conv(substring(md5(concat(lit("hte1:"),
-          col("user_id").cast("string"))), 1, 13), 16, 10).cast("long"),
-          lit(2)))
-    graft.operators.Drift.hteZTest(ev, "cents",
-      col("arm") === 0, col("event_type") === "view")
-  }
-
-  /** Snapshot expiry ([[graft.sources.TxLake.expireSnapshots]]): trim
-    * table history to the last 3 versions — a checkpoint lands AT the
-    * cutoff, data files removed below it are vacuumed (before the log
-    * trim erases their removes records), older entries drop; surviving
-    * versions replay bit-identically, pre-cutoff time travel is gone by
-    * design. Readout proves the reclaim AND the untouched snapshots.
-    */
-  private def q503(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLake
-    graft.sources.LocalFs.deleteRecursively(scratch(dir, "q503"))
-    val lake = scratch(dir, "q503") + "/t"
-    val o = T(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 2 === 1)) // v1
-    // v2 overwrites: v1's files become removed-at-2 — reclaimable once
-    // the cutoff moves past version 2
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 4 === 0),
-      overwrite = true)
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 4 === 2)) // v3
-    TxLake.commit(s, lake,
-      o.filter(col("o_orderkey") % 2 === 1 && col("o_orderkey") % 3 === 0)) // v4
-    TxLake.commit(s, lake,
-      o.filter(col("o_orderkey") % 2 === 1 && col("o_orderkey") % 3 === 1)) // v5
-    val beforeLatest = TxLake.readSnapshot(s, lake).count()
-    val beforeCutoff = TxLake.readSnapshot(s, lake, version = 3L).count()
-    val (cutoff, dropped, reclaimed) = TxLake.expireSnapshots(lake, keepLast = 3)
-    val afterLatest = TxLake.readSnapshot(s, lake).count()
-    val afterCutoff = TxLake.readSnapshot(s, lake, version = 3L).count()
-    val preCutoffRows = scala.util.Try(
-      TxLake.readSnapshot(s, lake, version = 2L).count()).getOrElse(0L)
-    import s.implicits._
-    // reclaimed FILE count tracks the writer's partitioning — report the
-    // boolean fact (v1's removed files were reclaimed), not the count
-    Seq((cutoff, dropped, reclaimed > 0L,
-      beforeLatest, afterLatest, beforeCutoff, afterCutoff, preCutoffRows))
-      .toDF("cutoff", "n_dropped", "reclaimed", "rows_latest_before",
-        "rows_latest_after", "rows_cutoff_before", "rows_cutoff_after",
-        "rows_below_cutoff")
-  }
-
-  /** Seasonal band monitor ([[graft.operators.Trend.seasonalBandPerKey]]):
-    * per (event type, hour-of-day) the exact p10/p50/p90 envelope of
-    * per-day spend at that slot and whether the newest day breaches it —
-    * "is today's 3pm normal for a 3pm".
-    */
-  private def q504(s: SparkSession, dir: String): DataFrame = {
-    val slots = T(s, dir, "events")
-      .groupBy(col("event_type"), evDateId.as("d"),
-        pmod(expr("(ts div 1000000000) div 3600"), lit(24L)).as("hod"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Trend.seasonalBandPerKey(
-        slots, "event_type", "d", "hod", "cents")
-      .orderBy(col("k"), col("slot"))
-  }
-
-  /** Rare-category collapse ([[graft.operators.Features.rareCollapse]]):
-    * part type and brand vocabularies folded below support 5 into
-    * `__other__` — the encoder-prep census a training job pins and a
-    * serving path replays.
-    */
-  private def q505(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Features.rareCollapse(
-      T(s, dir, "part"), Seq("p_type", "p_brand"), minSupport = 5L)
-      .orderBy(col("column"), col("out_value"))
-
-  /** Streaming seasonal-band maintenance
-    * ([[graft.streaming.StreamVerify.seasonalBandMaintenance]]): q504's
-    * per-slot envelope monitor as an ingestion side effect — per-batch
-    * (type, day, slot, partial-sum) censuses land exactly-once, decimal
-    * sums add, the drained store re-aggregates the exact slot table and
-    * reads through seasonalBandPerKey, sharing q504's oracle verbatim.
-    * Tenth self-maintaining surface.
-    */
-  private def q506(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.seasonalBandMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q506"))
-
-  /** Curve knee ([[graft.operators.Relational.curveKnee]]): the elbow of
-    * the cumulative-revenue-vs-rank curve — how many top customers
-    * before diminishing returns, the cut q339's ABC classes eyeball; the
-    * chord-distance argmax reduces to an exact integer cross-product.
-    */
-  private def q507(s: SparkSession, dir: String): DataFrame = {
-    val rev = T(s, dir, "orders").groupBy(col("o_custkey"))
-      .agg((sum(col("o_totalprice").cast(DecimalType(18, 2))) * 100)
-        .cast("long").as("cents"))
-    val order = Seq(col("cents").desc, col("o_custkey"))
-    val ranked = graft.operators.GlobalOrder.rowNumbers(rev, order, idCol = "x")
-    val summed = graft.operators.GlobalOrder.prefixSums(
-      rev, order, "cents", outCol = "y")
-    val curve = ranked.select(col("o_custkey").as("ck"), col("x"))
-      .join(summed.select(col("o_custkey"), col("y")),
-        col("ck") === col("o_custkey"))
-    graft.operators.Relational.curveKnee(curve, "x", "y")
-  }
-
-  /** Effective sample size ([[graft.operators.Sampling.essWeights]]):
-    * Kish ESS = (Σw)²/Σw² of order totals per priority — how many
-    * equal-weight rows the weighted set is statistically worth, the
-    * diagnostic run before importance-weighted training (q479/q371).
-    */
-  private def q508(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.essWeights(
-      T(s, dir, "orders").select(col("o_orderpriority"),
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents")),
-      "o_orderpriority", "cents")
-      .orderBy(col("g"))
-
-  /** Wilson funnel ([[graft.operators.Drift.funnelWilson]]): the
-    * view→click→purchase conversion chain with score-interval error
-    * bars — monotone prefix counts in one pass, pinned-order Wilson
-    * bounds; the "2% ± we actually know" reading q50's bare rates lack.
-    */
-  private def q509(s: SparkSession, dir: String): DataFrame = {
-    val flags = T(s, dir, "events")
-      .groupBy(col("user_id"))
-      .agg(max(col("event_type") === "view").as("view"),
-        max(col("event_type") === "click").as("click"),
-        max(col("event_type") === "purchase").as("purchase"))
-    graft.operators.Drift.funnelWilson(
-      flags, Seq("view", "click", "purchase"))
-      .orderBy(col("step"))
-  }
-
-  /** Vocabulary coverage curve ([[graft.operators.TextPipeline
-    * .vocabCoverage]]): token share covered by the top-K vocabulary at
-    * K ∈ {256, 1024, 4096} — the table a tokenizer's vocab budget is
-    * chosen from; distributed top-K cut, parameter-sized ranking only.
-    */
-  private def q510(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.vocabCoverage(
-      T(s, dir, "documents"), "text", Seq(256, 1024, 4096))
-      .orderBy(col("k"))
-
-  /** Streaming ESS maintenance
-    * ([[graft.streaming.StreamVerify.essMaintenance]]): q508's Kish
-    * diagnostic as an ingestion side effect — per-batch (g, n, Σw, Σw²)
-    * moment partials land exactly-once, moments add, the drained store
-    * reads through essFromMoments bit-identically to the batch path.
-    * Eleventh self-maintaining surface.
-    */
-  private def q511(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.essMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q511"))
-
-  /** Holm–Bonferroni gate ([[graft.operators.Drift.holmBonferroni]]):
-    * the step-DOWN FWER control beside q420's BH step-up over the same
-    * per-nation Welch-z family — reject smallest p while
-    * p ≤ α/(m−r+1), stop at the first failure; the gate for "one false
-    * page costs more than a few missed ones".
-    */
-  private def q512(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.holmBonferroni(
-      T(s, dir, "customer")
-        .join(T(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name"),
-          (col("c_acctbal").cast(DecimalType(12, 2)) * 100).cast("long")
-            .as("cents")),
-      "n_name", "cents")
-      .orderBy(col("p_rank"))
-
-  /** Lake log-health report: the observability surface an operator
-    * watches before a 100 TB table's open cost degrades — latest
-    * version, raw entry/checkpoint counts, [[TxLake.replayCount]] at
-    * latest (entries a read parses after the newest checkpoint), orphan
-    * count, snapshot mass. Built against a staged lake with a known
-    * history (6 commits, checkpoint, 2 more, 1 injected orphan) so every
-    * number is a construction fact.
-    */
-  private def q513(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLake
-    graft.sources.LocalFs.deleteRecursively(scratch(dir, "q513"))
-    val lake = scratch(dir, "q513") + "/t"
-    val o = T(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-    (0 until 6).foreach(i =>
-      TxLake.commit(s, lake, o.filter(col("o_orderkey") % 6 === i)))
-    TxLake.checkpoint(lake) // summarizes v6
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 11 === 0))
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 11 === 1))
-    // crashed-writer residue: one parquet file no reservation ever saw
-    val vNext = TxLake.latestVersion(lake) + 1
-    o.filter(col("o_orderkey") % 97 === 0).coalesce(1)
-      .write.mode("overwrite").parquet(s"$lake/data/v$vNext")
-    val logFiles = new java.io.File(s"$lake/_log").listFiles().map(_.getName)
-    import s.implicits._
-    Seq((TxLake.latestVersion(lake),
-      logFiles.count(_.endsWith(".json")).toLong,
-      logFiles.count(_.endsWith(".ckpt")).toLong,
-      logFiles.filter(_.endsWith(".ckpt"))
-        .map(_.stripPrefix("checkpoint-").stripSuffix(".ckpt").toLong).max,
-      TxLake.replayCount(lake).toLong,
-      TxLake.orphanFiles(lake).size.toLong,
-      TxLake.readSnapshot(s, lake).count()))
-      .toDF("latest_version", "n_log_entries", "n_checkpoints",
-        "ckpt_version", "replay_at_latest", "n_orphans", "snapshot_rows")
-  }
-
-  /** Streaming funnel maintenance
-    * ([[graft.streaming.StreamVerify.funnelMaintenance]]): q509's
-    * Wilson funnel as an ingestion side effect — per-batch per-user
-    * step-flag partials land exactly-once; boolean OR is associative,
-    * commutative and idempotent, so the drained readout is bit-equal to
-    * batch q509 and shares its oracle verbatim. Twelfth self-maintaining
-    * surface.
-    */
-  private def q514(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.funnelMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q514"))
-
-  /** Dedup threshold sweep: the est-Jaccard PRECISION curve over the
-    * production q84 banding — at each candidate threshold, how many
-    * candidate pairs survive and what fraction are TRUE near-dups
-    * (exact 3-shingle Jaccard ≥ 0.35 on the capped sample, the q340
-    * truth) — the curve a dedup run picks its cut from, where q340
-    * meters one config's recall.
-    */
-  private def q515(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Dedup
-    val docs = T(s, dir, "documents").filter(col("doc_id") < 300)
-    val cand = Dedup.minhashNearDupPairs(docs, "doc_id", "text",
-      threshold = 0.0)
-    val sets = Dedup.shingleHashRows(docs, "doc_id", "text", 3)
-      .groupBy(col("doc_id"))
-      .agg(array_sort(collect_set(col("sh"))).as("g"))
-    val scored = cand
-      .join(sets.select(col("doc_id").as("id_a"), col("g").as("ga")), "id_a")
-      .join(sets.select(col("doc_id").as("id_b"), col("g").as("gb")), "id_b")
-      .withColumn("true_j",
-        size(array_intersect(col("ga"), col("gb"))).cast("double") /
-          size(array_union(col("ga"), col("gb"))).cast("double"))
-      .localCheckpoint(true) // one reader per threshold
-    // coalesce: an empty candidate set must read 0, not NULL — at larger
-    // SFs the <300-id sample can be dup-free and the sweep still reports
-    val rows = Seq(0.3, 0.4, 0.5, 0.6, 0.7).map { t =>
-      scored.agg(lit(t).as("threshold"),
-        coalesce(sum(when(col("est_jaccard") >= t, 1L).otherwise(0L)),
-          lit(0L)).as("n_candidates"),
-        coalesce(sum(when(col("est_jaccard") >= t && col("true_j") >= 0.35,
-          1L).otherwise(0L)), lit(0L)).as("n_true"))
-    }.reduce(_ unionByName _)
-    rows.withColumn("precision",
-      when(col("n_candidates") > 0L,
-        round(col("n_true").cast("double") /
-          col("n_candidates").cast("double"), 6)))
-      .orderBy(col("threshold"))
-  }
-
-  /** Neyman plan EXECUTION: q488's variance-optimal allocation drawn —
-    * per stratum, the planned quota filled by the deterministic md5
-    * rank (the q48 recipe), capped at the stratum's size; readout
-    * proves the draw hit the plan exactly (keys checksummed).
-    */
-  private def q516(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "orders").select(col("o_orderpriority"),
-      col("o_orderkey"),
-      (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-        .cast("long").as("cents"))
-    val plan = graft.operators.Sampling.neymanAllocation(
-      base, "o_orderpriority", "cents", budget = 500L)
-      .select(col("stratum"), col("alloc"))
-    val w = Window.partitionBy(col("o_orderpriority"))
-      .orderBy(md5(col("o_orderkey").cast("string").cast("binary")),
-        col("o_orderkey"))
-    val drawn = base.withColumn("rn", row_number().over(w))
-      .join(broadcast(plan), col("o_orderpriority") === col("stratum"))
-      .filter(col("rn") <= col("alloc"))
-    drawn.groupBy(col("stratum"))
-      .agg(max(col("alloc")).as("alloc"), count(lit(1)).as("n_drawn"),
-        sum(col("o_orderkey")).as("drawn_key_sum"))
-      .orderBy(col("stratum"))
-  }
-
-  /** Streaming vocab-coverage maintenance
-    * ([[graft.streaming.StreamVerify.vocabCoverageMaintenance]]):
-    * q510's coverage curve as an ingestion side effect — per-batch
-    * (token, n) censuses land exactly-once, counts add, the drained
-    * store reads through vocabCoverageFromCensus and shares q510's
-    * oracle verbatim. Thirteenth self-maintaining surface.
-    */
-  private def q517(s: SparkSession, dir: String): DataFrame = {
-    // stage documents as TWO files so the drain really merges batches.
-    // Restaged UNCONDITIONALLY (the copy is corpus-partition cheap): an
-    // existence-gated cache would silently reuse stale halves if the
-    // source table changed under a persisted scratch dir, diverging from
-    // the oracle's live read.
-    val staged = scratch(dir, "q517_docs")
-    parStage(2) { par =>
-      T(s, dir, "documents").filter(col("doc_id") % 2 === par)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$staged/_half$par")
-    }
-    val src = scratch(dir, "q517_src")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    Seq(0, 1).foreach { par =>
-      val part = new java.io.File(s"$staged/_half$par").listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("doc half write produced no part file"))
-      stageCopy(part,
-        java.nio.file.Paths.get(s"$src/half$par.parquet"), par)
-    }
-    graft.streaming.StreamVerify.vocabCoverageMaintenance(
-      s, src, scratch(dir, "q517"), Seq(256, 1024, 4096))
-  }
-
-  /** Mann–Whitney effect sizes ([[graft.operators.Drift.mwEffectSizes]]):
-    * q319's rank test shipped WITH its effect report — CLES (probability
-    * a random urgent total exceeds a random low one) and rank-biserial
-    * r; at 10⁹ rows everything is "significant", only these say whether
-    * anyone should care.
-    */
-  private def q518(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.mwEffectSizes(
-      T(s, dir, "orders")
-        .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-        .select((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"), col("o_orderpriority")),
-      "cents", col("o_orderpriority") === "1-URGENT")
-
-  /** Restricted mean survival time ([[graft.operators.Trend.rmstFromKm]]):
-    * the area under q321's KM curve to a 200-bucket horizon — the
-    * censoring-proof "average lifetime" summary; step integral with
-    * grid-survival × integer-gap terms.
-    */
-  private def q519(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .select(col("user_id"), expr("ts div 1000000000").cast("long").as("sec"))
-    val b = ev.agg(min(col("sec")).as("lo"), max(col("sec")).as("hi")).head()
-    val cutoff = b.getLong(0) + 2L * (b.getLong(1) - b.getLong(0)) / 3L
-    graft.operators.Trend.rmstFromKm(
-      graft.operators.Trend.kaplanMeier(ev, "user_id", "sec", cutoff),
-      tau = 200L)
-  }
-
-  /** Log-rank test ([[graft.operators.Trend.logRank]]): do the two
-    * md5-split user arms' survival curves differ — the censoring-aware
-    * whole-curve comparison completing the survival shelf (q321 curve,
-    * q519 summary, this gate); hypergeometric O−E/V terms per duration.
-    */
-  private def q520(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .select(col("user_id"), expr("ts div 1000000000").cast("long").as("sec"))
-    val b = ev.agg(min(col("sec")).as("lo"), max(col("sec")).as("hi")).head()
-    val cutoff = b.getLong(0) + 2L * (b.getLong(1) - b.getLong(0)) / 3L
-    graft.operators.Trend.logRank(ev, "user_id", "sec", cutoff,
-      pmod(conv(substring(md5(concat(lit("lr1:"),
-        col("user_id").cast("string"))), 1, 13), 16, 10).cast("long"),
-        lit(2)) === 0)
-  }
-
-  /** Simpson-reversal detector ([[graft.operators.Drift
-    * .simpsonReversal]]): per event type, does the md5-split arm's
-    * high-value rate point OPPOSITE to the pooled effect — the
-    * aggregation-paradox screen run before "the feature wins overall"
-    * ships.
-    */
-  private def q521(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.simpsonReversal(
-      T(s, dir, "events").select(col("event_type"), col("value"),
-        pmod(conv(substring(md5(concat(lit("sp1:"),
-          col("user_id").cast("string"))), 1, 13), 16, 10).cast("long"),
-          lit(2)).as("arm")),
-      "event_type", col("arm") === 0, col("value") > 100.0)
-      .orderBy(col("segment"))
-
-  /** Jackknife ratio SE ([[graft.operators.Drift.jackknifeRatio]]):
-    * revenue-per-event with a delete-one-DAY jackknife — the
-    * cluster-respecting standard error beside q297's bootstrap and
-    * q496's delta method.
-    */
-  private def q522(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.jackknifeRatio(
-      T(s, dir, "events").select(evDateId.as("d"),
-        (col("value").cast(DecimalType(18, 2)) * 100).cast("long").as("x"),
-        lit(1L).as("one")),
-      "d", "x", "one")
-
-  /** Quantile treatment effects ([[graft.operators.Drift
-    * .quantileTreatmentEffects]]): per-arm exact p25/p50/p75/p90 of
-    * event value cents and their gaps — the distributional experiment
-    * readout a mean test can't give.
-    */
-  private def q523(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.quantileTreatmentEffects(
-      T(s, dir, "events").select(
-        (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-          .as("cents"),
-        pmod(conv(substring(md5(concat(lit("qte1:"),
-          col("user_id").cast("string"))), 1, 13), 16, 10).cast("long"),
-          lit(2)).as("arm")),
-      "cents", col("arm") === 0)
-
-  /** BH q-values ([[graft.operators.Drift.bhQValues]]): per-nation
-    * adjusted p-values — the smallest FDR level at which each test
-    * rejects, the reporting artifact beside q420's binary verdicts and
-    * q512's FWER gate.
-    */
-  private def q524(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.bhQValues(
-      T(s, dir, "customer")
-        .join(T(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name"),
-          (col("c_acctbal").cast(DecimalType(12, 2)) * 100).cast("long")
-            .as("cents")),
-      "n_name", "cents")
-      .orderBy(col("p_rank"))
-
-  /** Cohen's d / Hedges' g ([[graft.operators.Drift.cohensD]]): the
-    * standardized urgent-vs-low mean difference in pooled-SD units —
-    * the effect report q362's z can't give; Hedges small-sample
-    * correction included.
-    */
-  private def q525(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.cohensD(
-      T(s, dir, "orders")
-        .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-        .select((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"), col("o_orderpriority")),
-      "cents", col("o_orderpriority") === "1-URGENT")
-
-  /** Streaming QTE maintenance
-    * ([[graft.streaming.StreamVerify.qteMaintenance]]): q523's
-    * quantile-treatment-effect table as an ingestion side effect —
-    * per-batch (arm, value) censuses land exactly-once, counts add,
-    * the drained store reads through qteFromCensus and shares q523's
-    * oracle verbatim. Fourteenth self-maintaining surface.
-    */
-  private def q526(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.qteMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q526"))
-
-  /** Iceberg-layout interop ([[graft.sources.IcebergLite]]): a TxLake
-    * table (two append commits over orders) exports ZERO-COPY as an
-    * Iceberg-shaped metadata chain — version hint → metadata json → avro
-    * manifest list → avro manifests → data files referenced in place —
-    * and the readout aggregates what came back from WALKING THE FOREIGN
-    * CHAIN, never TxLake's log (the reference README's "Apache Iceberg
-    * table format" noun, read-only scope). The query self-checks the
-    * manifest accounting (chain row total == scanned rows) before
-    * returning; snapshot_id is a construction fact (2 commits).
-    */
-  private def q528(s: SparkSession, dir: String): DataFrame = {
-    val root = scratch(dir, "q528")
-    graft.sources.LocalFs.deleteRecursively(root)
-    val lake = s"$root/lake"
-    val ice = s"$root/ice"
-    val orders = T(s, dir, "orders").select(col("o_orderkey"),
-      col("o_orderpriority"),
-      (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-        .cast("long").as("cents"))
-    graft.sources.TxLake.commit(s, lake,
-      orders.filter(col("o_orderkey") % 2 === 0))
-    graft.sources.TxLake.commit(s, lake,
-      orders.filter(col("o_orderkey") % 2 === 1))
-    val snapId = graft.sources.IcebergLite.export(s, lake, ice)
-    val back = graft.sources.IcebergLite.read(s, ice).localCheckpoint(true)
-    val info = graft.sources.IcebergLite.snapshotInfo(s, ice)
-    require(info._1 == snapId && info._4 == back.count(),
-      "manifest chain accounting diverges from the scanned snapshot")
-    back.groupBy(col("o_orderpriority"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("total_cents"))
-      .withColumn("snapshot_id", lit(snapId))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  /** Greenwood bands ([[graft.operators.Trend.kmGreenwood]]): q321's
-    * survival curve shipped WITH its variance — S ± 1.96·SE clamped to
-    * [0,1], the error bars a retention readout needs before anyone
-    * reads a difference off two curves.
-    */
-  private def q547(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .select(col("user_id"), expr("ts div 1000000000").cast("long").as("sec"))
-    val b = ev.agg(min(col("sec")).as("lo"), max(col("sec")).as("hi")).head()
-    val cutoff = b.getLong(0) + 2L * (b.getLong(1) - b.getLong(0)) / 3L
-    graft.operators.Trend.kmGreenwood(
-      graft.operators.Trend.kaplanMeier(ev, "user_id", "sec", cutoff))
-      .orderBy(col("t"))
-  }
-
-  /** Hodges–Lehmann shift ([[graft.operators.Drift.hodgesLehmann]]):
-    * the robust cents-denominated size of the urgent-vs-low shift —
-    * the "how much" beside q319's verdict and q518's unitless sizes.
-    */
-  private def q548(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.hodgesLehmann(
-      T(s, dir, "orders")
-        .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-        .select((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"),
-          (col("o_orderpriority") === "1-URGENT").as("isa")),
-      "cents", col("isa"))
-
-  /** Seasonal strength ([[graft.operators.Trend.seasonalStrength]]):
-    * per event type, the variance share the hour-of-day profile
-    * explains — whether q148/q504's seasonal machinery should run on
-    * this key at all.
-    */
-  private def q561(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .select(col("event_type"),
-        expr("ts div 1000000000 div 3600").cast("long").as("hour_id"))
-      .groupBy(col("event_type"), col("hour_id"))
-      .agg(count(lit(1)).as("cnt"))
-    graft.operators.Trend.seasonalStrength(
-      hourly, "event_type", "hour_id", 24, "cnt")
-      .orderBy(col("event_type"))
-  }
-
-  /** STREAMING k-anonymity maintenance
-    * ([[graft.streaming.StreamVerify.kanonMaintenance]]): per-batch
-    * QI-class count partials add (ingestion only grows classes); the
-    * drained sweep equals batch q557 verbatim (shared oracle).
-    * Twenty-fourth self-maintaining surface — the privacy posture
-    * monitored at ingest cadence.
-    */
-  private def q562(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "customer")
-      .select(col("c_custkey"), col("c_nationkey"), col("c_mktsegment"))
-    val staged = scratch(dir, "q562_src")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(staged))
-    parStage(2) { par =>
-      val side = scratch(dir, s"q562_half$par")
-      base.filter(col("c_custkey") % 2 === par).drop("c_custkey")
-        .coalesce(1).write.mode("overwrite").parquet(side)
-      val part = new java.io.File(side).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("half write produced no part file"))
-      stageCopy(part,
-        java.nio.file.Paths.get(s"$staged/half$par.parquet"), par)
-    }
-    graft.streaming.StreamVerify.kanonMaintenance(s, staged,
-      scratch(dir, "q562"), Seq("c_nationkey", "c_mktsegment"),
-      Seq(2, 5, 10, 25))
-  }
-
-  /** Proportion effect sizes ([[graft.operators.Drift.propEffects]]):
-    * the 2×2 "how big, in what units" readout beside q283's z verdict —
-    * risk diff/ratio with Katz CI, odds ratio with Woolf CI, Cohen's h.
-    * Same hash-arm split discipline as q283, different salt.
-    */
-  private def q563(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.propEffects(
-      T(s, dir, "events").select(col("event_type"),
-        pmod(conv(substring(md5(concat(lit("pe:"),
-          col("event_id").cast("string"))), 1, 13), 16, 10).cast("long"),
-          lit(2)).as("arm")),
-      col("arm") === 0, (col("event_type") === "error").cast("long"))
-
-  /** Durbin–Watson residual screen
-    * ([[graft.operators.Trend.durbinWatson]]): is each event type's
-    * hourly-volume trend model (q147's OLS) missing serial structure —
-    * the regression-diagnostics complement to q429's raw-series
-    * Ljung–Box.
-    */
-  private def q564(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .select(expr("ts div 1000000000 div 3600").as("hour_id"),
-        col("event_type"))
-      .groupBy(col("event_type"), col("hour_id"))
-      .agg(count(lit(1)).as("n"))
-    graft.operators.Trend.durbinWatson(hourly, "event_type", "hour_id", "n")
-      .orderBy(col("event_type"))
-  }
-
-  /** Categorical distribution distances
-    * ([[graft.operators.Drift.categoricalDistances]]): TVD, Hellinger
-    * and Bhattacharyya between every source pair's language mix — the
-    * unordered-domain member of the KS/CvM/W1 distance family.
-    */
-  private def q565(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.categoricalDistances(
-      T(s, dir, "documents"), "source", "lang")
-
-  /** Goodman–Kruskal gamma + Somers' D
-    * ([[graft.operators.Relational.gkGamma]]): does order priority
-    * order order value — the tie-aware ordinal pair beside q424's
-    * tau-b, on the priority-ordinal × price-bucket census.
-    */
-  private def q566(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.gkGamma(
-      T(s, dir, "orders").select(
-        substring(col("o_orderpriority"), 1, 1).cast("long").as("pri"),
-        when(col("o_totalprice") < 50000, 0L)
-          .when(col("o_totalprice") < 150000, 1L)
-          .when(col("o_totalprice") < 300000, 2L).otherwise(3L)
-          .as("bucket")),
-      "pri", "bucket")
-
-  /** Chao1 richness + Good's coverage
-    * ([[graft.operators.Profiling.chao1]]) per source over the word
-    * domain — how much vocabulary each source still hides, the
-    * is-another-crawl-worth-it readout beside q535's Heaps' fit.
-    */
-  private def q567(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Profiling.chao1(
-      T(s, dir, "documents")
-        .select(col("source"), explode(TF.words(col("text"))).as("w"))
-        .filter(col("w") =!= ""),
-      "source", "w").orderBy(col("source"))
-
-  /** Hill-number diversity profile
-    * ([[graft.operators.Profiling.hillNumbers]]): each event type's
-    * EFFECTIVE audience size at q=0/1/2 — richness, exp(Shannon),
-    * inverse Simpson — in comparable user units.
-    */
-  private def q568(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Profiling.hillNumbers(
-      T(s, dir, "events"), "event_type", "user_id")
-      .orderBy(col("event_type"))
-
-  /** The q147/q564 hourly frame shared by the regression-diagnostics
-    * family (trend OLS, Durbin–Watson, Goldfeld–Quandt, Cook's D). */
-  private def hourlyVolumes(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
-      .select(expr("ts div 1000000000 div 3600").as("hour_id"),
-        col("event_type"))
-      .groupBy(col("event_type"), col("hour_id"))
-      .agg(count(lit(1)).as("n"))
-
-  /** Goldfeld–Quandt heteroscedasticity screen
-    * ([[graft.operators.Trend.goldfeldQuandt]]): are each trend's late
-    * residuals wider than its early ones — the fanning-out complement
-    * to q564's serial-memory DW on the same hourly fits.
-    */
-  private def q569(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.goldfeldQuandt(
-      hourlyVolumes(s, dir), "event_type", "hour_id", "n")
-      .orderBy(col("event_type"))
-
-  /** Murphy decomposition of the Brier score
-    * ([[graft.operators.Drift.brierDecomposition]]) on q288's
-    * buyer-propensity calibration frame — splits the ECE story into
-    * reliability (recalibratable) vs resolution (model quality) vs
-    * outcome uncertainty (irreducible).
-    */
-  private def q570(s: SparkSession, dir: String): DataFrame = {
-    val buyers = T(s, dir, "orders").select(col("o_custkey")).distinct()
-    val c = T(s, dir, "customer")
-      .join(buyers, col("c_custkey") === col("o_custkey"), "left")
-      .select(col("c_acctbal"),
-        col("o_custkey").isNotNull.cast("long").as("pos"))
-    val mm = c.agg(min(col("c_acctbal")).as("blo"),
-      max(col("c_acctbal")).as("bhi"))
-    val scored = c.crossJoin(broadcast(mm))
-      .select(round((col("c_acctbal") - col("blo")) /
-        (col("bhi") - col("blo")), 6).cast(DecimalType(12, 6)).as("score"),
-        col("pos"))
-    graft.operators.Drift.brierDecomposition(scored, col("score"),
-      col("pos"))
-  }
-
-  /** Cook's distance ([[graft.operators.Trend.cooksDistance]]): which
-    * single hours own each event type's trend line — per-point
-    * leverage, studentized residual and D flagged at 4/n.
-    */
-  private def q571(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.cooksDistance(
-      hourlyVolumes(s, dir), "event_type", "hour_id", "n")
-      .orderBy(col("event_type"), col("x"))
-
-  /** Run `n` independent staging writes CONCURRENTLY (guide §2.6 —
-    * overlap independent jobs): each staged side is a coalesce(1)
-    * single-task scan+write, so a sequential loop serializes on one core
-    * while the rest of the pool idles. Threads only overlap separate
-    * Spark actions (job descriptions/groups are thread-local; the FIFO
-    * scheduler back-fills) — each side's plan, bytes and file name are
-    * exactly what the sequential loop produced. Failures propagate.
-    */
-  private def parStage(n: Int)(body: Int => Unit): Unit = {
-    val errs = new java.util.concurrent.atomic.AtomicReference[Throwable]()
-    val ts = (0 until n).map { i =>
-      val t = new Thread(() => {
-        try body(i)
-        catch { case e: Throwable => errs.compareAndSet(null, e) }
-      })
-      t.setDaemon(true); t.start(); t
-    }
-    ts.foreach(_.join())
-    if (errs.get() != null) throw errs.get()
-  }
-
-  /** Copy a staged part file to its batch slot and PIN its mtime to a
-    * deterministic ascending stamp (the q135Events pin, applied to every
-    * staging site): FileStreamSource orders micro-batches by file
-    * modification time, and the concurrent [[parStage]] threads would
-    * otherwise race the clock — the sequential loops only ever ordered
-    * correctly because each copy happened after the previous one.
-    */
-  private def stageCopy(
-      part: java.io.File, dest: java.nio.file.Path, idx: Int): Unit = {
-    java.nio.file.Files.copy(part.toPath, dest,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    dest.toFile.setLastModified(1600000000000L + idx * 10000L)
-  }
-
-  /** Stage `base` (keyed by `splitCol` parity) as two single-file
-    * parquet batches under `name`, returning the staged dir — the
-    * two-micro-batch harness every census-store query drains through.
-    */
-  private def stageHalves(
-      s: SparkSession, dir: String, name: String,
-      base: DataFrame, splitCol: String): String = {
-    val staged = scratch(dir, s"${name}_src")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(staged))
-    parStage(2) { par =>
-      val side = scratch(dir, s"${name}_half$par")
-      base.filter(col(splitCol) % 2 === par).drop(splitCol)
-        .coalesce(1).write.mode("overwrite").parquet(side)
-      val part = new java.io.File(side).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("half write produced no part file"))
-      stageCopy(part,
-        java.nio.file.Paths.get(s"$staged/half$par.parquet"), par)
-    }
-    staged
-  }
-
-  /** Streaming 2×2 effect-size store
-    * ([[graft.streaming.StreamVerify.propEffectsMaintenance]]): per
-    * batch the four exact cells add; drained readout ≡ batch q563
-    * (oracle verbatim) — effect sizes + CIs at ingest cadence.
-    */
-  private def q572(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "events").select(col("event_id"),
-      pmod(conv(substring(md5(concat(lit("pe:"),
-        col("event_id").cast("string"))), 1, 13), 16, 10).cast("long"),
-        lit(2)).as("arm"),
-      (col("event_type") === "error").cast("long").as("conv"))
-    graft.streaming.StreamVerify.propEffectsMaintenance(
-      s, stageHalves(s, dir, "q572", base, "event_id"),
-      scratch(dir, "q572"))
-  }
-
-  /** Fisher's exact test ([[graft.operators.Drift.fisherExact]]) on
-    * the 200 hash-smallest events — the small-sample exact verdict
-    * beside q283's z; the sample bound fixes the hypergeometric
-    * support at any corpus scale.
-    */
-  private def q574(s: SparkSession, dir: String): DataFrame = {
-    val samp = T(s, dir, "events")
-      .select(col("event_id"), col("event_type"))
-      .orderBy(md5(concat(lit("fx:"), col("event_id").cast("string"))))
-      .limit(200)
-    graft.operators.Drift.fisherExact(
-      samp.select(
-        pmod(conv(substring(md5(concat(lit("fa:"),
-          col("event_id").cast("string"))), 1, 13), 16, 10).cast("long"),
-          lit(2)).as("arm"),
-        (col("event_type") === "error").cast("long").as("cv")),
-      col("arm") === 0, col("cv"))
-  }
-
-  /** Incidence-rate ratios ([[graft.operators.Drift.incidenceRates]]):
-    * each event type's events-per-active-hour vs the `view` baseline,
-    * with Poisson log-CI and Wald z — the exposure-normalized
-    * comparison the raw counts can't make.
-    */
-  private def q575(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.incidenceRates(
-      T(s, dir, "events").select(col("event_type"),
-        expr("ts div 1000000000 div 3600").as("hour_id")),
-      "event_type", "hour_id", "view")
-      .orderBy(col("event_type"))
-
-  /** Katz centrality ([[graft.operators.Graph.katz]]) on the
-    * customer↔supplier bipartite graph — every walk counts at
-    * α-discount, giving the floor-preserving ranking beside q100's
-    * drain-to-hubs PageRank.
-    */
-  private def q576(s: SparkSession, dir: String): DataFrame = {
-    val pairs = T(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"))
-      .join(T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .distinct()
-    val edges = pairs.select(col("cust").as("src"), (-col("supp")).as("dst"))
-      .unionByName(pairs.select((-col("supp")).as("src"),
-        col("cust").as("dst")))
-    graft.operators.Graph.katz(edges, iters = 3, alpha = 0.05)
-      .orderBy(col("katz").desc, col("node"))
-      .limit(100)
-  }
-
-  /** Flesch readability ([[graft.operators.TextPipeline.readability]]):
-    * per-doc reading-ease and grade level from three regexp censuses —
-    * the interpretable quality meter beside q176's entropy gates.
-    */
-  private def q577(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.readability(
-      T(s, dir, "documents"), "doc_id", "text")
-      .orderBy(col("doc_id"))
-
-  /** Stuart–Maxwell marginal homogeneity
-    * ([[graft.operators.Drift.stuartMaxwell]]): did users' event-mix
-    * shift between their first and last event — each user its own
-    * control, the k=3 generalization of q409's McNemar.
-    */
-  private def q578(s: SparkSession, dir: String): DataFrame = {
-    def bucket(c: Column): Column =
-      when(c.isin("click", "view"), "engage")
-        .when(c.isin("purchase", "signup"), "convert")
-        .otherwise("error")
-    val fl = firstLastTypes(s, dir)
-      .select(bucket(col("ft")).as("ft"), bucket(col("lt")).as("lt"))
-    graft.operators.Drift.stuartMaxwell(fl, col("ft"), col("lt"))
-  }
-
-  /** Per-user (first, last) event-type pairs — the paired-measurement
-    * frame q578/q580 test for shift and asymmetry. */
-  private def firstLastTypes(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
-      .groupBy(col("user_id"))
-      .agg(min(struct(col("ts"), col("event_id"), col("event_type")))
-        .as("f"),
-        max(struct(col("ts"), col("event_id"), col("event_type")))
-          .as("l"))
-      .select(col("f.event_type").as("ft"), col("l.event_type").as("lt"))
-
-  /** Bowker symmetry test ([[graft.operators.Drift.bowker]]) on the
-    * raw 5-type first/last pairs — which specific type-to-type flows
-    * churn asymmetrically, the any-k companion to q578's marginal
-    * test.
-    */
-  private def q580(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.bowker(firstLastTypes(s, dir),
-      col("ft"), col("lt"))
-
-  /** Weighted Cohen's kappa ([[graft.operators.Drift.weightedKappa]]):
-    * two size-class raters of the same documents (char-bucket vs
-    * word-bucket, both 5-point) — near-misses count, the ordinal
-    * upgrade of q447's binary κ.
-    */
-  private def q581(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.weightedKappa(
-      T(s, dir, "documents")
-        .select(expr("length(text) div 120").as("c1"),
-          TF.wordCount(col("text")).as("w"))
-        .select(least(lit(4L), col("c1")).as("r1"),
-          least(lit(4L), expr("w div 20")).as("r2")),
-      col("r1"), col("r2"), k = 5)
-
-  /** Chow structural-break test ([[graft.operators.Trend.chowTest]])
-    * at each trend's median hour — does granting the break beat two
-    * parameters' worth of noise, the significance companion to q301's
-    * detector.
-    */
-  private def q582(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.chowTest(
-      hourlyVolumes(s, dir), "event_type", "hour_id", "n")
-      .orderBy(col("event_type"))
-
-  /** Direct + indirect rate standardization
-    * ([[graft.operators.Drift.directStandardization]]): two hash
-    * cohorts' error rates adjusted for their hour-of-day mix — crude
-    * vs standardized rate vs SMR.
-    */
-  private def q583(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.directStandardization(
-      T(s, dir, "events").select(
-        pmod(conv(substring(md5(concat(lit("ds:"),
-          col("event_id").cast("string"))), 1, 13), 16, 10).cast("long"),
-          lit(2)).as("arm"),
-        expr("ts div 1000000000 div 3600 % 24").as("hod"),
-        (col("event_type") === "error").cast("long").as("e")),
-      col("arm"), col("hod"), col("e"))
-      .orderBy(col("cohort"))
-
-  /** Classifier suite ([[graft.operators.Features.classifierSuite]]):
-    * MCC, Youden's J, balanced accuracy, specificity, NPV and F2 on
-    * q330's threshold frame — the prevalence-robust readouts P/R/F1
-    * omit.
-    */
-  private def q584(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Features.classifierSuite(T(s, dir, "orders"),
-      "o_totalprice", col("o_orderstatus") === "F", 150000.0)
-
-  /** Blob near-dup pairs ([[graft.operators.Multimodal.blobChunkPairs]]):
-    * content-defined BYTE chunks over the binary payload — re-encoded
-    * or appended-to blobs share most chunks though whole-payload
-    * hashes see different objects; bucketed by chunk hash, never
-    * all-pairs.
-    */
-  private def q586(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Multimodal.blobChunkPairs(T(s, dir, "documents"))
-
-  /** Function-word stylometry
-    * ([[graft.operators.TextPipeline.stylometryCosine]]): pairwise
-    * cosine between sources' function-word habit vectors — topic-free
-    * style similarity, the provenance flag beside q565's lang-mix
-    * distances.
-    */
-  private def q587(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.stylometryCosine(
-      T(s, dir, "documents"), "source", "text")
-
-  /** Partial autocorrelation to lag 3
-    * ([[graft.operators.Trend.pacf3PerKey]]): where each hourly
-    * series' PACF cuts off is the AR order its trend model needs —
-    * the order meter q255's raw ACF can't give.
-    */
-  private def q588(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.pacf3PerKey(
-      hourlyVolumes(s, dir), "event_type", "hour_id", "n")
-      .orderBy(col("event_type"))
-
-  /** Gumbel block-maxima fit ([[graft.operators.Trend.gumbelMaxima]]):
-    * daily peak-volume extremes per event type → method-of-moments μ/β
-    * and 10/100-block return levels — the expected-peak meter beside
-    * q383's tail-heaviness index.
-    */
-  private def q589(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.gumbelMaxima(
-      hourlyVolumes(s, dir), "event_type", "hour_id", "n")
-      .orderBy(col("event_type"))
-
-  /** Actuarial life table ([[graft.operators.Trend.lifeTable]]): daily
-    * retention intervals with the half-exposure withdrawal convention —
-    * the reporting-granularity sibling of q321's exact-time KM.
-    */
-  private def q590(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .select(col("user_id"), expr("ts div 1000000000").cast("long").as("sec"))
-    val b = ev.agg(min(col("sec")).as("lo"), max(col("sec")).as("hi")).head()
-    val cutoff = b.getLong(0) + 2L * (b.getLong(1) - b.getLong(0)) / 3L
-    graft.operators.Trend.lifeTable(ev, "user_id", "sec", cutoff)
-      .orderBy(col("interval"))
-  }
-
-  /** Cox proportional hazards
-    * ([[graft.operators.Trend.coxBinaryFromLives]]) on
-    * TIME-TO-FIRST-PURCHASE: the hazard RATIO between the md5-split
-    * user arms — "arm A converts θ× as fast", the magnitude q520's
-    * log-rank verdict doesn't give. Non-purchasers censor at their
-    * last activity.
-    */
-  private def q591(s: SparkSession, dir: String): DataFrame = {
-    val lives = T(s, dir, "events")
-      .select(col("user_id"),
-        expr("ts div 1000000000").cast("long").as("sec"),
-        col("event_type"))
-      .groupBy(col("user_id"))
-      .agg(min(col("sec")).as("first"), max(col("sec")).as("last"),
-        min(when(col("event_type") === "purchase", col("sec")))
-          .as("conv"))
-      .select(
-        ((coalesce(col("conv"), col("last")) - col("first")) / 3600L)
-          .cast("long").as("t"),
-        col("conv").isNotNull.cast("long").as("death"),
-        (pmod(conv(substring(md5(concat(lit("cx:"),
-          col("user_id").cast("string"))), 1, 13), 16, 10).cast("long"),
-          lit(2)) === 0).as("isa"))
-    graft.operators.Trend.coxBinaryFromLives(lives)
-  }
-
-  /** p-chart ([[graft.operators.Drift.pChart]]): daily error share
-    * against ±3σ binomial limits — the SPC rate chart whose limits
-    * widen as each day's own n shrinks, beside q446's XmR.
-    */
-  private def q592(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.pChart(
-      T(s, dir, "events"),
-      expr("ts div 1000000000 div 86400"),
-      (col("event_type") === "error").cast("long"))
-
-  /** One-way effect sizes ([[graft.operators.Drift.anovaEffects]]):
-    * η²/ω²/ε²/Cohen's f for price by priority — the "does the grouping
-    * MATTER" beside q408's F verdict.
-    */
-  private def q593(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.anovaEffects(
-      T(s, dir, "orders"), "o_orderpriority",
-      (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long"))
-
-  /** Price indices ([[graft.operators.Relational.priceIndices]]):
-    * Laspeyres/Paasche/Fisher between 1996 and 1997 over the matched
-    * part basket — unit values from exact cents/qty sums.
-    */
-  private def q594(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.priceIndices(
-      T(s, dir, "lineitem").select(col("l_partkey"),
-        year(col("l_shipdate")).as("yr"),
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"),
-        col("l_quantity").cast("long").as("q")),
-      col("l_partkey"), col("yr"), col("cents"), col("q"),
-      basePeriod = 1996L, curPeriod = 1997L)
-
-  /** Streaming extreme-value store
-    * ([[graft.streaming.StreamVerify.gumbelMaintenance]]):
-    * hour-partitioned batches commit block-maxima partials (MAX
-    * merges); drained Gumbel fit ≡ batch q589 (oracle verbatim).
-    */
-  private def q595(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "events").select(col("event_id"),
-      col("event_type").as("g"),
-      expr("ts div 1000000000 div 3600").as("hour_id"))
-      .withColumn("par", col("hour_id") % 2)
-    graft.streaming.StreamVerify.gumbelMaintenance(
-      s, stageHalves(s, dir, "q595", base.drop("event_id"), "par"),
-      scratch(dir, "q595"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Hosmer–Lemeshow test ([[graft.operators.Drift.hosmerLemeshow]])
-    * on q288's scored frame — the χ² calibration verdict beside the
-    * ECE magnitude and q570's decomposition.
-    */
-  private def q596(s: SparkSession, dir: String): DataFrame = {
-    val buyers = T(s, dir, "orders").select(col("o_custkey")).distinct()
-    val c = T(s, dir, "customer")
-      .join(buyers, col("c_custkey") === col("o_custkey"), "left")
-      .select(col("c_acctbal"),
-        col("o_custkey").isNotNull.cast("long").as("pos"))
-    val mm = c.agg(min(col("c_acctbal")).as("blo"),
-      max(col("c_acctbal")).as("bhi"))
-    val scored = c.crossJoin(broadcast(mm))
-      .select(round((col("c_acctbal") - col("blo")) /
-        (col("bhi") - col("blo")), 6).cast(DecimalType(12, 6)).as("score"),
-        col("pos"))
-    graft.operators.Drift.hosmerLemeshow(scored, col("score"), col("pos"))
-  }
-
-  /** Poisson goodness-of-fit ([[graft.operators.Drift.poissonGof]]):
-    * the users×days activity matrix (zeros included) against a fitted
-    * Poisson — burst/heavy-user structure q456's single VMR number
-    * can't localize.
-    */
-  private def q597(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.poissonGof(
-      T(s, dir, "events").select(col("user_id"),
-        expr("ts div 1000000000 div 86400").as("day")),
-      col("user_id"), col("day"))
-
-  /** G-test ([[graft.operators.Relational.gTest]]): the
-    * likelihood-ratio twin of q128's χ² on status × priority —
-    * additive across drill-downs, and 2n·MI in nats tying it to q256.
-    */
-  private def q598(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.gTest(
-      T(s, dir, "orders"), "o_orderstatus", "o_orderpriority")
-
-  /** Haberman adjusted residuals
-    * ([[graft.operators.Relational.adjustedResiduals]]): WHICH
-    * status × priority cells carry the dependence the total χ² flags.
-    */
-  private def q599(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.adjustedResiduals(
-      T(s, dir, "orders"), "o_orderstatus", "o_orderpriority")
-
-  /** TOST equivalence ([[graft.operators.Drift.tostEquivalence]]): is
-    * the hash-split arms' error-rate difference provably inside
-    * ±0.5pp — the no-regression release gate q283 gets backward.
-    */
-  private def q600(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.tostEquivalence(
-      T(s, dir, "events").select(
-        pmod(conv(substring(md5(concat(lit("eq:"),
-          col("event_id").cast("string"))), 1, 13), 16, 10).cast("long"),
-          lit(2)).as("arm"),
-        (col("event_type") === "error").cast("long").as("cv")),
-      col("arm") === 0, col("cv"), delta = 0.005)
-
-  /** DTW between daily-rhythm profiles
-    * ([[graft.operators.Trend.dtwProfiles]]): phase-tolerant shape
-    * distance between event types' hour-of-day mixes — a 2-hour shift
-    * reads near-zero here and large under q455's slot-wise JSD.
-    */
-  private def q601(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.dtwProfiles(
-      T(s, dir, "events"), col("event_type"),
-      expr("ts div 1000000000 div 3600 % 24"))
-
-  /** Circular time-of-day statistics
-    * ([[graft.operators.Trend.circularStats]]): mean direction,
-    * resultant length, and the Rayleigh rhythm-existence test — hour
-    * is a circle, the linear mean of {23h, 1h} is nonsense noon.
-    */
-  private def q602(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.circularStats(
-      T(s, dir, "events"), col("event_type"),
-      expr("ts div 1000000000 div 3600 % 24"))
-      .orderBy(col("key"))
-
-  /** Streaming equivalence gate
-    * ([[graft.streaming.StreamVerify.tostMaintenance]]): 2×2 cell
-    * partials add; drained TOST verdict ≡ batch q600 (oracle
-    * verbatim).
-    */
-  private def q603(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "events").select(col("event_id"),
-      pmod(conv(substring(md5(concat(lit("eq:"),
-        col("event_id").cast("string"))), 1, 13), 16, 10).cast("long"),
-        lit(2)).as("arm"),
-      (col("event_type") === "error").cast("long").as("conv"))
-    graft.streaming.StreamVerify.tostMaintenance(
-      s, stageHalves(s, dir, "q603", base, "event_id"),
-      scratch(dir, "q603"), delta = 0.005)
-  }
-
-  /** Haar energy decomposition ([[graft.operators.Trend.haarEnergy]]):
-    * which timescale owns each hourly series' variance — exact-integer
-    * multi-resolution energies, the spectrum q501's single period and
-    * q255's fixed lags can't draw.
-    */
-  private def q604(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.haarEnergy(
-      hourlyVolumes(s, dir), "event_type", "hour_id", "n")
-
-  /** Mean-excess table ([[graft.operators.Trend.meanExcess]]): the
-    * peaks-over-threshold diagnostic beside q589's block maxima —
-    * rising slope = Pareto tail, flat = exponential.
-    */
-  private def q605(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.meanExcess(
-      hourlyVolumes(s, dir).select(col("event_type"), col("n")),
-      "event_type", "n")
-
-  /** Kupiec POF backtest ([[graft.operators.Trend.kupiecPof]]): does
-    * the first-half 95th-percentile alert line fire at its claimed 5%
-    * on the second half — the out-of-sample verdict.
-    */
-  private def q606(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.kupiecPof(
-      hourlyVolumes(s, dir), "event_type", "hour_id", "n")
-
-  /** Jarque–Bera ([[graft.operators.Relational.jarqueBera]]): the
-    * normality VERDICT over q476's exact power sums — the gate before
-    * any ±kσ rule is trusted on price by priority.
-    */
-  private def q607(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.jarqueBera(
-      T(s, dir, "orders").select(col("o_orderpriority"),
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents")),
-      "o_orderpriority", "cents").orderBy(col("g"))
-
-  /** Overlap coefficient ([[graft.operators.Drift.overlapCoefficient]]):
-    * common-support mass between the BUILDING segment's and the rest's
-    * balance-score bins — the audit q453's covariate balance assumes.
-    */
-  private def q608(s: SparkSession, dir: String): DataFrame = {
-    val c = T(s, dir, "customer")
-      .select(col("c_acctbal"),
-        (col("c_mktsegment") === "BUILDING").as("seg"))
-    val mm = c.agg(min(col("c_acctbal")).as("blo"),
-      max(col("c_acctbal")).as("bhi"))
-    val scored = c.crossJoin(broadcast(mm))
-      .select(round((col("c_acctbal") - col("blo")) /
-        (col("bhi") - col("blo")), 6).cast(DecimalType(12, 6)).as("score"),
-        col("seg"))
-    graft.operators.Drift.overlapCoefficient(scored, col("score"),
-      col("seg"))
-  }
-
-  /** Record-breaking statistics ([[graft.operators.Trend.recordStats]]):
-    * running-maximum records vs the harmonic budget — the
-    * extremes-only trend detector beside q421's Mann–Kendall.
-    */
-  private def q609(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.recordStats(
-      hourlyVolumes(s, dir), "event_type", "hour_id", "n")
-      .orderBy(col("event_type"))
-
-  /** Streaming p-chart store
-    * ([[graft.streaming.StreamVerify.pChartMaintenance]]): daily
-    * subgroup partials add; drained chart ≡ batch q592 (oracle
-    * verbatim).
-    */
-  private def q610(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "events").select(col("event_id"),
-      expr("ts div 1000000000 div 86400").as("b"),
-      (col("event_type") === "error").cast("long").as("x"))
-    graft.streaming.StreamVerify.pChartMaintenance(
-      s, stageHalves(s, dir, "q610", base, "event_id"),
-      scratch(dir, "q610"))
-  }
-
-  /** Theil's U + error decomposition
-    * ([[graft.operators.Trend.theilU]]): the seasonal-naive baseline
-    * scored and diagnosed — bias/variance/covariance shares of its
-    * MSE, the yardstick every seasonal model must beat.
-    */
-  private def q611(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.theilU(
-      hourlyVolumes(s, dir), "event_type", "hour_id", "n")
-
-  /** Streaming circular-rhythm store
-    * ([[graft.streaming.StreamVerify.circularMaintenance]]): slot
-    * censuses add; drained direction/Rayleigh ≡ batch q602 (oracle
-    * verbatim).
-    */
-  private def q612(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "events").select(col("event_id"),
-      col("event_type").as("k"),
-      expr("ts div 1000000000 div 3600 % 24").as("s"))
-    graft.streaming.StreamVerify.circularMaintenance(
-      s, stageHalves(s, dir, "q612", base, "event_id"),
-      scratch(dir, "q612"))
-      .orderBy(col("key"))
-  }
-
-  /** Hour-of-day uniformity χ²
-    * ([[graft.operators.Trend.uniformityChi2]]): the ANY-shape rhythm
-    * test — a bimodal commute pattern cancels q602's Rayleigh
-    * resultant but not this.
-    */
-  private def q613(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.uniformityChi2(
-      T(s, dir, "events"), col("event_type"),
-      expr("ts div 1000000000 div 3600 % 24"))
-
-  /** KPI bridge ([[graft.operators.Drift.kpiBridge]]): the
-    * first-half→second-half error-rate move split into per-type rate
-    * vs mix vs interaction effects — "the type got worse" vs "traffic
-    * shifted toward it".
-    */
-  private def q614(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .select(expr("ts div 1000000000 div 86400").as("day"),
-        col("event_type"),
-        (col("event_type") === "error").cast("long").as("e"))
-    val b = ev.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
-      .head()
-    val mid = b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 2L
-    graft.operators.Drift.kpiBridge(ev, col("event_type"),
-      col("day") <= mid, col("e"))
-  }
-
-  /** Hurst exponent ([[graft.operators.Trend.hurstRS]]): long-memory
-    * in each hourly series — persistence vs mean reversion from the
-    * R/S slope, beyond anything q255/q588's fixed lags can see.
-    */
-  private def q615(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.hurstRS(
-      hourlyVolumes(s, dir), "event_type", "hour_id", "n")
-
-  /** Markov entropy rate
-    * ([[graft.operators.Drift.markovEntropyRate]]): how much of the
-    * NEXT event is new information given the current one — the
-    * sequence-level complement to q460's marginal entropy.
-    */
-  private def q616(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.markovEntropyRate(
-      T(s, dir, "events"), col("user_id"),
-      struct(col("ts"), col("event_id")), col("event_type"))
-
-  /** Decision-stump split ([[graft.operators.Features.stumpSplit]]):
-    * the single $100-bucket price threshold that buys the most Gini
-    * purity on order status — the tree-node sibling of q325's WOE/IV.
-    */
-  private def q617(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Features.stumpSplit(
-      T(s, dir, "orders").select(
-        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) div 10000")
-          .as("bucket"),
-        (col("o_orderstatus") === "F").cast("long").as("y")),
-      col("bucket"), col("y"))
-
-  /** Kendall's W ([[graft.operators.Drift.kendallW]]): do the daily
-    * event-type volume leaderboards agree across days — ranking
-    * concordance with the Friedman χ² verdict.
-    */
-  private def q618(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.kendallW(
-      T(s, dir, "events").select(
-        expr("ts div 1000000000 div 86400").as("day"),
-        col("event_type"), lit(1L).as("one")),
-      col("day"), col("event_type"), col("one"))
-
-  /** Sample entropy ([[graft.operators.Trend.sampleEntropy]]):
-    * regularity of each hourly series — the nonlinear complement to
-    * q615's long memory and q604's energy levels.
-    */
-  private def q619(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.sampleEntropy(
-      hourlyVolumes(s, dir), "event_type", "hour_id", "n")
-
-  /** Streaming leaderboard-concordance store
-    * ([[graft.streaming.StreamVerify.kendallWMaintenance]]): (day,
-    * type) score partials add; drained W ≡ batch q618 (oracle
-    * verbatim).
-    */
-  private def q620(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "events").select(col("event_id"),
-      expr("ts div 1000000000 div 86400").as("r"),
-      col("event_type").as("it"))
-    graft.streaming.StreamVerify.kendallWMaintenance(
-      s, stageHalves(s, dir, "q620", base, "event_id"),
-      scratch(dir, "q620"))
-  }
-
-  /** Disproportionality screen
-    * ([[graft.operators.Drift.disproportionality]]): PRR/ROR per
-    * (source, language) cell vs the pooled rest — "3.4× the
-    * background rate", the ratio-scaled sibling of q599's residuals.
-    */
-  private def q621(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.disproportionality(
-      T(s, dir, "documents"), col("source"), col("lang"))
-
-  /** Breslow–Day homogeneity
-    * ([[graft.operators.Drift.breslowDay]]): is q443's pooled odds
-    * ratio even valid — do the per-year ORs agree, or is MH averaging
-    * genuinely different effects.
-    */
-  private def q622(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.breslowDay(
-      T(s, dir, "orders").select(
-        year(col("o_orderdate")).cast("long").as("yr"),
-        col("o_orderpriority"), col("o_orderstatus")),
-      "yr",
-      expr("substring(o_orderpriority, 1, 1) IN ('1','2')"),
-      col("o_orderstatus") === "F")
-
-  /** Streaming disproportionality store
-    * ([[graft.streaming.StreamVerify.disproMaintenance]]): (source,
-    * lang) cell partials add; drained PRR/ROR screen ≡ batch q621
-    * (oracle verbatim).
-    */
-  private def q623(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "documents").select(col("doc_id"),
-      col("source").as("seg"), col("lang").as("out"))
-    graft.streaming.StreamVerify.disproMaintenance(
-      s, stageHalves(s, dir, "q623", base, "doc_id"),
-      scratch(dir, "q623"))
-  }
-
-  /** Sharpe/Sortino ([[graft.operators.Trend.sharpeSortino]]):
-    * risk-adjusted drift of each type's daily volume — total vs
-    * downside-only volatility, beside q370's drawdown.
-    */
-  private def q624(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.sharpeSortino(
-      T(s, dir, "events")
-        .select(col("event_type"),
-          expr("ts div 1000000000 div 86400").as("day"))
-        .groupBy(col("event_type"), col("day"))
-        .agg(count(lit(1)).as("n")),
-      "event_type", "day", "n")
-
-  /** Process capability
-    * ([[graft.operators.Drift.processCapability]]): Pp/Ppk of order
-    * value per priority against declared $50k–$350k limits plus the
-    * exact out-of-spec share — the contract score beside q446/q592's
-    * time charts.
-    */
-  private def q625(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.processCapability(
-      T(s, dir, "orders"), col("o_orderpriority"),
-      (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long"),
-      lsl = 5000000L, usl = 35000000L)
-
-  /** Lorenz deciles ([[graft.operators.Relational.lorenzCurve]]): the
-    * bottom-d/10 value shares per priority — the distribution TABLE
-    * q436's Gini scalar summarizes.
-    */
-  private def q626(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.lorenzCurve(
-      T(s, dir, "orders").select(col("o_orderpriority"),
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents")),
-      "o_orderpriority", "cents")
-
-  /** Taylor's power law ([[graft.operators.Trend.taylorLaw]]): the
-    * variance-mean scaling exponent across (type, hour-of-day) series
-    * — how alert bands must widen with volume, the cross-key
-    * complement to q456's per-key dispersion.
-    */
-  private def q627(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.taylorLaw(
-      T(s, dir, "events").select(
-        concat(col("event_type"), lit(":"),
-          expr("ts div 1000000000 div 3600 % 24")).as("k"),
-        expr("ts div 1000000000 div 86400").as("day"),
-        lit(1L).as("one")),
-      "k", "day", "one")
-
-  /** Dickey–Fuller ([[graft.operators.Trend.dickeyFuller]]): is each
-    * hourly series a random walk or mean-reverting — the stationarity
-    * gate before q147's trend fits mean anything.
-    */
-  private def q628(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.dickeyFuller(
-      hourlyVolumes(s, dir), "event_type", "hour_id", "n")
-
-  /** Granger causality ([[graft.operators.Trend.grangerCausality]]):
-    * does yesterday's view volume predict today's purchases beyond
-    * purchases' own history — the directional upgrade of q360's
-    * symmetric lagged correlation. Zero-filled shared hour spine.
-    */
-  private def q629(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.grangerCausality(
-      vpHourly(s, dir), "h", "x", "y")
-
-  /** Zero-filled shared hour spine carrying view (x) and purchase (y)
-    * counts — the aligned two-series frame q629 (Granger) and q638
-    * (Engle–Granger) both regress over. */
-  private def vpHourly(s: SparkSession, dir: String): DataFrame = {
-    val h = T(s, dir, "events")
-      .select(expr("ts div 1000000000 div 3600").as("h"),
-        col("event_type"))
-    val spine = h.agg(min(col("h")).as("lo"), max(col("h")).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("h"))
-    val cen = h.groupBy(col("h"))
-      .agg(sum(when(col("event_type") === "view", 1L).otherwise(0L))
-        .as("x"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("y"))
-    spine.join(cen, Seq("h"), "left")
-      .select(col("h"), coalesce(col("x"), lit(0L)).as("x"),
-        coalesce(col("y"), lit(0L)).as("y"))
-  }
-
-  /** Dense zero-filled (event_type, hour_id, n) spine — the gap-free
-    * series the centered-window family (q634 decomposition, q637
-    * Newey–West) requires; hourlyVolumes alone would silently skip
-    * empty hours and bend every centered window. */
-  private def hourlySpineDense(s: SparkSession, dir: String): DataFrame = {
-    val h = T(s, dir, "events")
-      .select(expr("ts div 1000000000 div 3600").as("hour_id"),
-        col("event_type"))
-    val hours = h.agg(min(col("hour_id")).as("lo"),
-        max(col("hour_id")).as("hi"))
-      .select(explode(sequence(col("lo"), col("hi"))).as("hour_id"))
-    val types = h.select(col("event_type")).distinct()
-    val cen = h.groupBy(col("event_type"), col("hour_id"))
-      .agg(count(lit(1)).as("n"))
-    types.crossJoin(hours)
-      .join(cen, Seq("event_type", "hour_id"), "left")
-      .select(col("event_type"), col("hour_id"),
-        coalesce(col("n"), lit(0L)).as("n"))
-  }
-
-  /** Classical additive decomposition
-    * ([[graft.operators.Trend.classicalDecomposition]]): each type's
-    * 24-hour seasonal index table + strength of seasonality — how much
-    * of the series is just the daily cycle.
-    */
-  private def q634(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.classicalDecomposition(
-      hourlySpineDense(s, dir), "event_type", "hour_id", "n", period = 24)
-
-  /** Concurrency sweep + Little's law
-    * ([[graft.operators.Relational.concurrencySweep]]): average and
-    * PEAK concurrent active users over per-user lifespans, with
-    * L = λW emitted from both sides.
-    */
-  private def q635(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.concurrencySweep(
-      T(s, dir, "events")
-        .select(col("user_id"), expr("ts div 1000000000").as("sec"))
-        .groupBy(col("user_id"))
-        .agg(min(col("sec")).as("s"), (max(col("sec")) + 1L).as("e")),
-      "s", "e")
-
-  /** Streaming concurrency store
-    * ([[graft.streaming.StreamVerify.concurrencyMaintenance]]):
-    * interval totals and boundary deltas add; drained sweep ≡ batch
-    * q635 (oracle verbatim).
-    */
-  private def q636(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "events")
-      .select(col("user_id"), expr("ts div 1000000000").as("sec"))
-      .groupBy(col("user_id"))
-      .agg(min(col("sec")).as("s"), (max(col("sec")) + 1L).as("e"))
-    graft.streaming.StreamVerify.concurrencyMaintenance(
-      s, stageHalves(s, dir, "q636", base, "user_id"),
-      scratch(dir, "q636"))
-  }
-
-  /** Newey–West HAC slope errors
-    * ([[graft.operators.Trend.neweyWestSlope]]): the honest trend
-    * error bar when residuals are serially correlated — the
-    * CORRECTION to what q564's DW detects.
-    */
-  private def q637(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.neweyWestSlope(
-      hourlySpineDense(s, dir), "event_type", "hour_id", "n", lags = 3)
-
-  /** Engle–Granger cointegration
-    * ([[graft.operators.Trend.engleGranger]]): do view and purchase
-    * volumes share one stochastic trend — the levels-modeling license
-    * q629's differenced Granger gives up.
-    */
-  private def q638(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.engleGranger(vpHourly(s, dir), "h", "x", "y")
-
-  /** LSH design table ([[graft.operators.Dedup.lshDesignTable]]):
-    * expected candidates / recall@0.7 / false-candidate share for each
-    * power-of-two (bands, rows) split, integrated against the observed
-    * pair-similarity histogram. CONDITIONING CAVEAT (r11 ADVICE): the
-    * histogram comes from minhashNearDupPairs under the hard-coded
-    * (8, 4) banding, so it only sees pairs that collide under that
-    * split — expected_candidates / fp_share for MORE permissive rows
-    * like (32, 1) are therefore biased low (pairs invisible to (8, 4)
-    * are absent from the integrand). Read the table as "how the
-    * (8, 4)-reachable pair population redistributes across designs",
-    * not as an unconditioned capacity plan.
-    */
-  private def q639(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Dedup.lshDesignTable(
-      graft.operators.Dedup.minhashNearDupPairs(
-        T(s, dir, "documents"), "doc_id", "text", threshold = 0.0),
-      "est_jaccard")
-
-  /** Platt scaling ([[graft.operators.Features.plattScaling]]): the
-    * parametric calibrator over q288's buyer-propensity frame — raw
-    * balance buckets become probabilities via eight pinned Newton
-    * steps.
-    */
-  private def q640(s: SparkSession, dir: String): DataFrame = {
-    // label = "has an OPEN-status order": both classes present at every
-    // gate scale (the plain has-any-order label is constant at sf<=0.01)
-    val buyers = T(s, dir, "orders")
-      .filter(col("o_orderstatus") === "O")
-      .select(col("o_custkey")).distinct()
-    val frame = T(s, dir, "customer")
-      .join(buyers, col("c_custkey") === col("o_custkey"), "left")
-      .select(
-        expr("CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) div 10000")
-          .as("s"),
-        col("o_custkey").isNotNull.cast("long").as("y"))
-    graft.operators.Features.plattScaling(frame, col("s"), col("y"))
-  }
-
-  /** HMM regime evidence ([[graft.operators.Trend.hmmRegimeEvidence]]):
-    * is each hourly series one Poisson rate or a quiet/burst mixture —
-    * the scaled-forward likelihood ratio, model-based where q341/q456
-    * are moment-based.
-    */
-  private def q641(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.hmmRegimeEvidence(
-      hourlyVolumes(s, dir), "event_type", "hour_id", "n")
-
-  /** LTV curves ([[graft.operators.Relational.ltvCurve]]): cumulative
-    * revenue per customer by account-age week per first-order-year
-    * cohort — the value-weighted complement to q72's retention.
-    */
-  private def q642(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.ltvCurve(
-      T(s, dir, "orders").select(col("o_custkey"), col("o_orderdate"),
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents")),
-      "o_custkey", "o_orderdate", "cents")
-
-  /** Join-cardinality audit
-    * ([[graft.operators.Relational.joinCardinalityAudit]]): the exact
-    * pre-flight for the per-user self-join shape — output rows, the
-    * amplification factor and the fan-out keys, from the key censuses
-    * alone.
-    */
-  private def q643(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(col("user_id"))
-    graft.operators.Relational.joinCardinalityAudit(ev, ev,
-      "user_id", "user_id")
-  }
-
-  /** Streaming LTV store
-    * ([[graft.streaming.StreamVerify.ltvMaintenance]]):
-    * entity-partitioned batches' cohort censuses add; drained curves ≡
-    * batch q642 (oracle verbatim).
-    */
-  private def q644(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "orders").select(
-      col("o_custkey").as("u"), col("o_orderdate").as("d"),
-      (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-        .cast("long").as("v"))
-      .withColumn("par", col("u") % 2)
-    graft.streaming.StreamVerify.ltvMaintenance(
-      s, stageHalves(s, dir, "q644", base, "par"),
-      scratch(dir, "q644"))
-  }
-
-  /** Competing risks ([[graft.operators.Trend.competingRisks]]):
-    * cumulative incidence of purchase-ended vs otherwise-ended
-    * lifetimes — WHAT ends each lifetime, where q321 only says when.
-    */
-  private def q645(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(col("user_id"),
-      expr("ts div 1000000000").as("sec"), col("event_id"),
-      col("event_type"))
-    val b = ev.agg(min(col("sec")).as("lo"), max(col("sec")).as("hi"))
-      .head()
-    val cutoff = b.getLong(0) + 2L * (b.getLong(1) - b.getLong(0)) / 3L
-    val lives = ev.groupBy(col("user_id"))
-      .agg(min(col("sec")).as("first"), max(col("sec")).as("last"),
-        max_by(col("event_type"), struct(col("sec"), col("event_id")))
-          .as("last_type"))
-      .select(((col("last") - col("first")) / 3600L).cast("long").as("t"),
-        (col("last") <= cutoff && col("last_type") === "purchase")
-          .as("ia"),
-        (col("last") <= cutoff && col("last_type") =!= "purchase")
-          .as("ib"))
-    graft.operators.Trend.competingRisks(lives, "t", col("ia"), col("ib"))
-  }
-
-  /** Mean cumulative function
-    * ([[graft.operators.Trend.meanCumulativeFunction]]): expected
-    * cumulative events per user by the user's own age — the
-    * recurrent-events curve the one-death survival shelf can't draw.
-    */
-  private def q646(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.meanCumulativeFunction(
-      T(s, dir, "events").select(col("user_id"),
-        expr("ts div 1000000000").as("sec")),
-      "user_id", "sec")
-
-  /** Streaming MCF store
-    * ([[graft.streaming.StreamVerify.mcfMaintenance]]):
-    * entity-partitioned batches' age/lifespan censuses add; drained
-    * curve ≡ batch q646 (oracle verbatim).
-    */
-  private def q647(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "events")
-      .select(col("user_id").as("u"), expr("ts div 1000000000").as("sec"))
-      .withColumn("par", col("u") % 2)
-    graft.streaming.StreamVerify.mcfMaintenance(
-      s, stageHalves(s, dir, "q647", base, "par"),
-      scratch(dir, "q647"))
-  }
-
-  /** Price elasticity ([[graft.operators.Trend.logLogFit]]): per-brand
-    * ln(quantity) on ln(retail price) across parts — "1% up in price
-    * moves demand b%".
-    */
-  private def q648(s: SparkSession, dir: String): DataFrame = {
-    val qty = T(s, dir, "lineitem").groupBy(col("l_partkey"))
-      .agg(sum(col("l_quantity").cast("long")).as("qty"))
-    graft.operators.Trend.logLogFit(
-      T(s, dir, "part").join(qty, col("p_partkey") === col("l_partkey"))
-        .select(col("p_brand"),
-          (col("p_retailprice").cast(DecimalType(12, 2)) * 100)
-            .cast("long").as("cents"), col("qty")),
-      "p_brand", col("cents"), col("qty"))
-  }
-
-  /** Word burstiness ([[graft.operators.TextPipeline.wordBurstiness]]):
-    * Church–Gale adaptation — which words CLUMP in documents (topic
-    * anchors) vs spread evenly (glue), the prior tf-idf assumes.
-    */
-  private def q649(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.wordBurstiness(
-      T(s, dir, "documents"), "doc_id", "text")
-
-  /** The per-user encouragement frame q650 (IV) and q653 (its
-    * streaming store) share: hash-assigned encouragement z, exposure
-    * x = encouraged AND clicked, outcome y = ever errored. */
-  private def ivFrame(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
-      .groupBy(col("user_id"))
-      .agg(max((col("event_type") === "click").cast("long")).as("hc"),
-        max((col("event_type") === "error").cast("long")).as("y"))
-      .select(col("user_id"),
-        (pmod(conv(substring(md5(concat(lit("iv:"),
-          col("user_id").cast("string"))), 1, 13), 16, 10).cast("long"),
-          lit(2)) === 1L).as("z"), col("hc"), col("y"))
-      .select(col("user_id"), col("z"),
-        when(col("z") && col("hc") === 1L, 1L).otherwise(0L).as("x"),
-        col("y"))
-
-  /** IV / Wald estimate ([[graft.operators.Drift.ivWald]]): the causal
-    * effect under a randomized encouragement with self-selected
-    * exposure — ITT over first stage, naive diff beside it so the
-    * confounding gap is visible.
-    */
-  private def q650(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.ivWald(ivFrame(s, dir).drop("user_id"),
-      col("z"), col("x"), col("y"))
-
-  /** Regression discontinuity
-    * ([[graft.operators.Drift.regressionDiscontinuity]]): does
-    * crossing the zero-balance threshold itself change buying — local
-    * linear fits on both sides of the cutoff, the jump at zero.
-    */
-  private def q651(s: SparkSession, dir: String): DataFrame = {
-    val buyers = T(s, dir, "orders").select(col("o_custkey")).distinct()
-    graft.operators.Drift.regressionDiscontinuity(
-      T(s, dir, "customer")
-        .join(buyers, col("c_custkey") === col("o_custkey"), "left")
-        .select((col("c_acctbal").cast(DecimalType(12, 2)) * 100)
-          .cast("long").as("run"),
-          col("o_custkey").isNotNull.cast("long").as("y")),
-      col("run"), col("y"), cutoff = 0L, bandwidth = 300000L)
-  }
-
-  /** Mediation with Sobel ([[graft.operators.Drift.mediation]]): how
-    * much of urgency's effect on order value travels THROUGH line
-    * count — indirect a·b vs direct c′.
-    */
-  private def q652(s: SparkSession, dir: String): DataFrame = {
-    val lc = T(s, dir, "lineitem").groupBy(col("l_orderkey"))
-      .agg(count(lit(1)).as("m"))
-    graft.operators.Drift.mediation(
-      T(s, dir, "orders")
-        .join(lc, col("o_orderkey") === col("l_orderkey"), "left")
-        .select(
-          expr("CAST(substring(o_orderpriority, 1, 1) IN ('1','2') AS LONG)")
-            .as("x"),
-          coalesce(col("m"), lit(0L)).as("m"),
-          (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-            .cast("long").as("y")),
-      col("x"), col("m"), col("y"))
-  }
-
-  /** Streaming IV store
-    * ([[graft.streaming.StreamVerify.ivMaintenance]]): (z, x) cell
-    * censuses add; drained Wald ≡ batch q650 (oracle verbatim).
-    */
-  private def q653(s: SparkSession, dir: String): DataFrame = {
-    val base = ivFrame(s, dir).withColumn("par", col("user_id") % 2)
-      .drop("user_id")
-    graft.streaming.StreamVerify.ivMaintenance(
-      s, stageHalves(s, dir, "q653", base, "par"),
-      scratch(dir, "q653"))
-  }
-
-  /** Skyline ([[graft.operators.Relational.skyline]]): the Pareto
-    * frontier of cheap-AND-popular parts — non-dominated under
-    * (minimize price, maximize quantity sold).
-    */
-  private def q654(s: SparkSession, dir: String): DataFrame = {
-    val qty = T(s, dir, "lineitem").groupBy(col("l_partkey"))
-      .agg(sum(col("l_quantity").cast("long")).as("qty"))
-    graft.operators.Relational.skyline(
-      T(s, dir, "part").join(qty, col("p_partkey") === col("l_partkey"))
-        .select(col("p_partkey"),
-          (col("p_retailprice").cast(DecimalType(12, 2)) * 100)
-            .cast("long").as("cents"), col("qty")),
-      "p_partkey", col("cents"), col("qty"))
-  }
-
-  /** Fixed effects ([[graft.operators.Relational.fixedEffects]]): the
-    * within-user effect of night hours on erroring — immune to
-    * everything constant about the user, with the confounded pooled
-    * slope beside it.
-    */
-  private def q655(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.fixedEffects(
-      T(s, dir, "events").select(col("user_id"),
-        expr("CAST(ts div 1000000000 div 3600 % 24 < 6 AS LONG)")
-          .as("x"),
-        (col("event_type") === "error").cast("long").as("y")),
-      col("user_id"), col("x"), col("y"))
-
-  /** Oaxaca–Blinder ([[graft.operators.Relational.oaxacaBlinder]]):
-    * how much of the BUILDING-vs-MACHINERY spend gap is balance
-    * composition vs different returns on the same balance.
-    */
-  private def q656(s: SparkSession, dir: String): DataFrame = {
-    val spend = T(s, dir, "orders").groupBy(col("o_custkey"))
-      .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-        .cast("long")).as("sp"))
-    graft.operators.Relational.oaxacaBlinder(
-      T(s, dir, "customer")
-        .filter(col("c_mktsegment").isin("BUILDING", "MACHINERY"))
-        .join(spend, col("c_custkey") === col("o_custkey"), "left")
-        .select((col("c_mktsegment") === "BUILDING").as("isa"),
-          (col("c_acctbal").cast(DecimalType(12, 2)) * 100)
-            .cast("long").as("x"),
-          coalesce(col("sp"), lit(0L)).as("y")),
-      col("isa"), col("x"), col("y"))
-  }
-
-  /** Yule–Walker AR(2) fit ([[graft.operators.Trend.yuleWalkerAr2]]):
-    * per-type autoregressive coefficients, innovation variance and the
-    * one-step forecast from the hourly volume series — the MODEL
-    * behind q255's autocorrelations and q588's PACF signatures.
-    */
-  private def q657(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.yuleWalkerAr2(
-      hourlySpineDense(s, dir), "event_type", "hour_id", "n")
-
-  /** Diebold–Mariano forecast comparison
-    * ([[graft.operators.Trend.dieboldMariano]]): is the seasonal-naive
-    * (same hour yesterday) forecast BETTER than the last-hour naive, or
-    * is the backtest gap luck — Newey–West-studentized loss
-    * differential per type.
-    */
-  private def q658(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy(col("event_type")).orderBy(col("hour_id"))
-    val base = hourlySpineDense(s, dir)
-      .withColumn("f1", lag(col("n"), 1).over(w))
-      .withColumn("f2", lag(col("n"), 24).over(w))
-      .filter(col("f1").isNotNull && col("f2").isNotNull)
-    graft.operators.Trend.dieboldMariano(
-      base, "event_type", "hour_id", "n", "f1", "f2", lags = 3)
-  }
-
-  /** 1-D Lloyd k-means ([[graft.operators.Learn.kMeans1D]]): k=4
-    * balance bands fit to the data (vs q67's fixed-width bins) —
-    * deterministic slice-median init, 3 Lloyd rounds over the value
-    * census, per-cluster n / centroid / WSS.
-    */
-  private def q659(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Learn.kMeans1D(
-      T(s, dir, "customer").select(
-        (col("c_acctbal").cast(DecimalType(12, 2)) * 100)
-          .cast("long").as("cents")),
-      "cents", k = 4, iters = 3)
-
-  /** Per-customer (balance, spend) frame shared by the 2-feature
-    * learners (q660 PCA, q663 Mahalanobis, q665 LDA). */
-  private def balanceSpend(s: SparkSession, dir: String): DataFrame = {
-    val spend = T(s, dir, "orders").groupBy(col("o_custkey"))
-      .agg(sum((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-        .cast("long")).as("sp"))
-    T(s, dir, "customer")
-      .join(spend, col("c_custkey") === col("o_custkey"), "left")
-      .select(col("c_custkey").as("id"),
-        (col("c_acctbal").cast(DecimalType(12, 2)) * 100)
-          .cast("long").as("x"),
-        coalesce(col("sp"), lit(0L)).as("y"))
-  }
-
-  /** 2-feature PCA ([[graft.operators.Learn.pca2]]): the principal
-    * direction and variance split of the (balance, spend) cloud —
-    * closed-form eigenvalues, no iterative eigen.
-    */
-  private def q660(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Learn.pca2(balanceSpend(s, dir), "x", "y")
-
-  /** Three-regressor OLS ([[graft.operators.Learn.ols3]]): order value
-    * on line count + total quantity + urgency, coefficients via the
-    * centered 3×3 normal equations in closed form.
-    */
-  private def q661(s: SparkSession, dir: String): DataFrame = {
-    val lc = T(s, dir, "lineitem").groupBy(col("l_orderkey"))
-      .agg(count(lit(1)).as("nl"),
-        sum(col("l_quantity").cast("long")).as("qty"))
-    graft.operators.Learn.ols3(
-      T(s, dir, "orders")
-        .join(lc, col("o_orderkey") === col("l_orderkey"), "left")
-        .select(
-          (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-            .cast("long").as("cents"),
-          coalesce(col("nl"), lit(0L)).as("nl"),
-          coalesce(col("qty"), lit(0L)).as("qty"),
-          substring(col("o_orderpriority"), 1, 1).isin("1", "2")
-            .cast("long").as("urgent")),
-      "cents", "nl", "qty", "urgent")
-  }
-
-  /** Streaming AR-model maintenance
-    * ([[graft.streaming.StreamVerify.yuleWalkerMaintenance]]): hourly
-    * censuses add across micro-batches; the drained dense-spine AR(2)
-    * fit ≡ batch q657 (oracle verbatim).
-    */
-  private def q662(s: SparkSession, dir: String): DataFrame = {
-    val staged = scratch(dir, "q662_events")
-    val src = scratch(dir, "q662_src")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    parStage(3) { par =>
-      val side = s"$staged/_slice$par"
-      s.read.parquet(s"$dir/events.parquet")
-        .filter(col("event_id") % 3 === par)
-        .coalesce(1).write.mode("overwrite").parquet(side)
-      val part = new java.io.File(side).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("event slice write produced no part file"))
-      stageCopy(part,
-        java.nio.file.Paths.get(s"$src/slice$par.parquet"), par)
-    }
-    graft.streaming.StreamVerify.yuleWalkerMaintenance(
-      s, src, scratch(dir, "q662"))
-      .orderBy(col("event_type"))
-  }
-
-  /** 2-feature Mahalanobis outliers
-    * ([[graft.operators.Learn.mahalanobis2]]): covariance-aware
-    * distance over (balance, spend) — the correlated outliers
-    * per-column z-scores miss; top 20.
-    */
-  private def q663(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Learn.mahalanobis2(balanceSpend(s, dir),
-      "id", "x", "y", topK = 20)
-
-  /** Decision stump ([[graft.operators.Learn.decisionStump]]): the best
-    * single balance threshold for "has an open order", by exact Gini
-    * gain over the value census — the one-rule baseline.
-    */
-  private def q664(s: SparkSession, dir: String): DataFrame = {
-    val open = T(s, dir, "orders")
-      .filter(col("o_orderstatus") === "O")
-      .select(col("o_custkey")).distinct()
-    graft.operators.Learn.decisionStump(
-      T(s, dir, "customer")
-        .join(open, col("c_custkey") === col("o_custkey"), "left")
-        .select(
-          (col("c_acctbal").cast(DecimalType(12, 2)) * 100)
-            .cast("long").as("cents"),
-          col("o_custkey").isNotNull.as("has_open")),
-      "cents", col("has_open"))
-  }
-
-  /** Fisher LDA ([[graft.operators.Learn.lda2]]): the closed-form
-    * (balance, spend) direction separating open-order customers from
-    * the rest — the class-aware axis q660's PCA can't see.
-    */
-  private def q665(s: SparkSession, dir: String): DataFrame = {
-    val open = T(s, dir, "orders")
-      .filter(col("o_orderstatus") === "O")
-      .select(col("o_custkey")).distinct()
-    val cls = T(s, dir, "customer")
-      .join(open, col("c_custkey") === col("o_custkey"), "left")
-      .select(col("c_custkey").as("id"),
-        col("o_custkey").isNotNull.as("opened"))
-    graft.operators.Learn.lda2(
-      balanceSpend(s, dir).join(cls, Seq("id")),
-      col("opened"), "x", "y")
-  }
-
-  /** 1-D silhouette ([[graft.operators.Learn.silhouette1D]]): the
-    * measured cluster-quality meter for q659's bands — per-cluster
-    * mean silhouette from census prefix sums, zero pairs materialized.
-    */
-  private def q666(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Learn.silhouette1D(
-      T(s, dir, "customer").select(
-        (col("c_acctbal").cast(DecimalType(12, 2)) * 100)
-          .cast("long").as("cents")),
-      "cents", k = 4, iters = 3)
-
-  /** K-means elbow sweep ([[graft.operators.Learn.kMeansElbow]]): WSS
-    * at k = 2..6 over the balance census with the curvature knee
-    * flagged — the choose-k meter run before q659 commits to 4.
-    */
-  private def q667(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Learn.kMeansElbow(
-      T(s, dir, "customer").select(
-        (col("c_acctbal").cast(DecimalType(12, 2)) * 100)
-          .cast("long").as("cents")),
-      "cents", ks = 2 to 6, iters = 3)
-
-  /** Huber robust location ([[graft.operators.Learn.huberLocation]]):
-    * the outlier-resistant center of order value — 4 IRLS rounds over
-    * the value census with the MAD-scaled 1.345 cutoff.
-    */
-  private def q668(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Learn.huberLocation(
-      T(s, dir, "orders").select(
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents")),
-      "cents")
-
-  /** Davies–Bouldin index ([[graft.operators.Learn.daviesBouldin]]):
-    * the one-number separation verdict on q659's bands.
-    */
-  private def q669(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Learn.daviesBouldin(q659(s, dir))
-
-  /** Zero-inflated Poisson fit ([[graft.operators.Trend.zipFit]]): the
-    * structural-zeros decomposition of weekly part demand over the
-    * DENSE week spine — π (never-ordered mass) and λ (rate when
-    * active), with the fitted vs observed zero share as the one-glance
-    * diagnostic; the parametric answer beside q464's SBC routing.
-    */
-  private def q670(s: SparkSession, dir: String): DataFrame = {
-    // sparse path: absent weeks ARE the zeros — the key × bucket grid
-    // is never materialized (the shape that survives 10⁹ keys)
-    val d = weeklyDemand(s, dir).localCheckpoint(true)
-    val b = d.agg(min(col("week")).as("lo"), max(col("week")).as("hi"))
-      .head()
-    graft.operators.Trend.zipFitFromSparse(
-      d, "l_partkey", "qty", b.getLong(1) - b.getLong(0) + 1L)
-  }
-
-  /** MA(1) fit ([[graft.operators.Trend.ma1Fit]]): the moving-average
-    * verdict beside q657's AR(2) on the same hourly series — θ from the
-    * invertible root of ρ₁ = θ/(1+θ²), with |ρ₁| ≥ ½ refusing loudly
-    * ("this is not an MA(1)").
-    */
-  private def q671(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.ma1Fit(
-      hourlySpineDense(s, dir), "event_type", "hour_id", "n")
-
-  /** ARMA(1,1) fit ([[graft.operators.Trend.arma11Fit]]): the mixed
-    * model between q657 and q671 — φ from the lag-1→2 ACF decay,
-    * θ from the reciprocal-root quadratic, both refusing on
-    * non-stationary or non-ARMA signatures.
-    */
-  private def q672(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.arma11Fit(
-      hourlySpineDense(s, dir), "event_type", "hour_id", "n")
-
-  /** Weibull lifetime fit ([[graft.operators.Trend.weibullFit]]):
-    * median-rank probability-plot regression on positive order→ship
-    * latencies per return flag — shape (hazard direction), scale, and
-    * the plot-linearity r² beside q589's Gumbel extremes.
-    */
-  private def q673(s: SparkSession, dir: String): DataFrame = {
-    val li = T(s, dir, "lineitem").select(col("l_orderkey"),
-      col("l_returnflag"), to_date(col("l_shipdate")).as("sd"))
-    val o = T(s, dir, "orders").select(col("o_orderkey"),
-      to_date(col("o_orderdate")).as("od"))
-    graft.operators.Trend.weibullFit(
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .select(col("l_returnflag"),
-          datediff(col("sd"), col("od")).cast("long").as("lat")),
-      "l_returnflag", "lat")
-  }
-
-  /** Eigenvector centrality ([[graft.operators.Graph.eigenCentrality]]):
-    * lazy (A+I) power iteration on the q100 customer–supplier
-    * co-purchase graph — the undirected influence ranking beside
-    * pageRank's surfer and q407's hub/authority split; the +I shift is
-    * what converges on this bipartite graph at all.
-    */
-  private def q674(s: SparkSession, dir: String): DataFrame = {
-    val pairs = T(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"))
-      .join(T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .distinct()
-    val edges = pairs.select(col("cust").as("src"), (-col("supp")).as("dst"))
-      .unionByName(pairs.select((-col("supp")).as("src"),
-        col("cust").as("dst")))
-    graft.operators.Graph.eigenCentrality(edges, iters = 6)
-      .orderBy(col("score").desc, col("node"))
-      .limit(100)
-  }
-
-  /** Gazetteer tagging ([[graft.operators.TextPipeline.gazetteerTag]]):
-    * the part-name vocabulary as a broadcast dictionary over the
-    * document corpus — matched mass, coverage, and the dominant
-    * catalog term per doc, beside q30's language-ID routing.
-    */
-  private def q675(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.gazetteerTag(
-      T(s, dir, "documents"), "doc_id", "text",
-      T(s, dir, "part").select(explode(split(lower(trim(col("p_name"))),
-        " ")).as("term")),
-      "term")
-
-  /** Streaming MA-model maintenance
-    * ([[graft.streaming.StreamVerify.ma1Maintenance]]): hourly censuses
-    * add across micro-batches; the drained dense-spine MA(1) fit ≡
-    * batch q671 (oracle verbatim).
-    */
-  private def q676(s: SparkSession, dir: String): DataFrame = {
-    val staged = scratch(dir, "q676_events")
-    val src = scratch(dir, "q676_src")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    parStage(3) { par =>
-      val side = s"$staged/_slice$par"
-      s.read.parquet(s"$dir/events.parquet")
-        .filter(col("event_id") % 3 === par)
-        .coalesce(1).write.mode("overwrite").parquet(side)
-      val part = new java.io.File(side).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("event slice write produced no part file"))
-      stageCopy(part,
-        java.nio.file.Paths.get(s"$src/slice$par.parquet"), par)
-    }
-    graft.streaming.StreamVerify.ma1Maintenance(
-      s, src, scratch(dir, "q676"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Meta-analytic pooling ([[graft.operators.Drift.combinePvalues]]):
-    * q420's per-nation Welch family pooled per REGION — Stouffer's
-    * direction-aware Z and Fisher's −2Σln p with its exact even-df
-    * chi-square survival; "is there any balance effect in this region
-    * at all", the one verdict the multiplicity shelf never gives.
-    */
-  private def q677(s: SparkSession, dir: String): DataFrame = {
-    val d38 = DecimalType(38, 0)
-    val c = T(s, dir, "customer")
-      .join(T(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-      .join(T(s, dir, "region"), col("n_regionkey") === col("r_regionkey"))
-      .select(col("r_name"), col("n_name"),
-        (col("c_acctbal").cast(DecimalType(12, 2)) * 100).cast("long")
-          .as("cents"))
-    val cts = col("cents").cast(d38)
-    val g = c.groupBy(col("r_name"), col("n_name"))
-      .agg(count(lit(1)).as("na"), sum(cts).as("sa"), sum(cts * cts).as("saa"))
-    val t = c.agg(count(lit(1)).as("nt"), sum(cts).as("st"),
-      sum(cts * cts).as("stt"))
-    def dbl(x: Column): Column = x.cast("double")
-    val j = g.crossJoin(broadcast(t)).select(col("r_name"), col("n_name"),
-      col("na"), dbl(col("sa")).as("saD"), dbl(col("saa")).as("saaD"),
-      (col("nt") - col("na")).as("nb"),
-      dbl(col("st") - col("sa")).as("sbD"),
-      dbl(col("stt") - col("saa")).as("sbbD"))
-    val na = dbl(col("na"))
-    val nb = dbl(col("nb"))
-    val va = (na * col("saaD") - col("saD") * col("saD")) /
-      (na * (na - 1.0))
-    val vb = (nb * col("sbbD") - col("sbD") * col("sbD")) /
-      (nb * (nb - 1.0))
-    val z = (col("saD") / na - col("sbD") / nb) / sqrt(va / na + vb / nb)
-    val withP = j.select(col("r_name"), col("n_name"),
-      round(z, 6).as("zr"),
-      round(graft.operators.Drift.normalTailP2(z), 9).as("p"))
-    graft.operators.Drift.combinePvalues(withP, "r_name", "p", "zr")
-  }
-
-  /** Newsvendor stock level ([[graft.operators.Relational.newsvendor]]):
-    * per-part order quantity at the cu=3/co=1 critical fractile over
-    * per-line demanded quantities, with expected underage/overage/cost
-    * at the optimum — the PRESCRIPTION beside q670/q463's demand
-    * descriptions.
-    */
-  private def q678(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.newsvendor(
-      T(s, dir, "lineitem").select(col("l_partkey"),
-        col("l_quantity").cast("long").as("qty")),
-      "l_partkey", "qty", underageCost = 3.0, overageCost = 1.0)
-
-  /** Atkinson inequality ([[graft.operators.Relational.atkinsonIndex]]):
-    * the welfare-reading inequality number (1 − geomean/mean) on
-    * positive customer balances per nation, beside q338's rank-based
-    * Gini and q411's entropy-based Theil; negative balances counted,
-    * not silently dropped.
-    */
-  private def q679(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.atkinsonIndex(
-      T(s, dir, "customer")
-        .join(T(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name"),
-          (col("c_acctbal").cast(DecimalType(12, 2)) * 100).cast("long")
-            .as("cents")),
-      "n_name", "cents")
-
-  /** Empirical-Bayes rate shrinkage
-    * ([[graft.operators.Drift.ebBetaBinomial]]): per-part return rates
-    * shrunk toward the MoM beta-binomial prior — the rankable rate
-    * table beside q540's James–Stein means.
-    */
-  private def q680(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.ebBetaBinomial(
-      T(s, dir, "lineitem").select(col("l_partkey"),
-        (col("l_returnflag") === "R").as("ret")),
-      "l_partkey", col("ret"))
-
-  /** Anderson–Darling normality ([[graft.operators.Drift.andersonDarling]]):
-    * the tail-weighted "can the z-machinery be used on this metric"
-    * gate, per nation on balance cents — beside q295's body-sensitive
-    * binned KS. The cents RANGE bounds the census per key at any
-    * corpus scale (the operator's stated caller contract).
-    */
-  private def q681(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.andersonDarling(
-      T(s, dir, "customer")
-        .join(T(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name"),
-          (col("c_acctbal").cast(DecimalType(12, 2)) * 100).cast("long")
-            .as("cents")),
-      "n_name", "cents")
-
-  /** Erlang-C staffing ([[graft.operators.Relational.erlangStaffing]]):
-    * per-type server counts meeting a 20% wait-probability target at a
-    * 5-minute handle time, from the dense hourly arrival census — the
-    * queueing prescription beside q14's volumes and q636's concurrency.
-    */
-  private def q682(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.erlangStaffing(
-      hourlySpineDense(s, dir), "event_type", "n",
-      serviceTimeSec = 300.0, targetWait = 0.2)
-
-  /** JL random-projection audit
-    * ([[graft.operators.Similarity.randomProjectionAudit]]): original
-    * vs 16-dim sign-projected squared distances on a hash-bucketed
-    * pair sample — "can we serve 16 dims", measured, beside q467's
-    * prefix-truncation fidelity.
-    */
-  private def q683(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Similarity.randomProjectionAudit(
-      T(s, dir, "embeddings"), "vec_id", "embedding", dims = 64)
-
-  /** Streaming staffing maintenance
-    * ([[graft.streaming.StreamVerify.erlangMaintenance]]): hourly
-    * arrival censuses add across micro-batches; the drained Erlang-C
-    * staffing table ≡ batch q682 (oracle verbatim).
-    */
-  private def q684(s: SparkSession, dir: String): DataFrame = {
-    val staged = scratch(dir, "q684_events")
-    val src = scratch(dir, "q684_src")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    parStage(3) { par =>
-      val side = s"$staged/_slice$par"
-      s.read.parquet(s"$dir/events.parquet")
-        .filter(col("event_id") % 3 === par)
-        .coalesce(1).write.mode("overwrite").parquet(side)
-      val part = new java.io.File(side).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("event slice write produced no part file"))
-      stageCopy(part,
-        java.nio.file.Paths.get(s"$src/slice$par.parquet"), par)
-    }
-    graft.streaming.StreamVerify.erlangMaintenance(
-      s, src, scratch(dir, "q684"))
-      .orderBy(col("event_type"))
-  }
-
-  /** XYZ variability classes ([[graft.operators.Relational.xyzClasses]]):
-    * the predictability axis of the ABC/XYZ inventory matrix beside
-    * q339's value axis — weekly-demand CV from the sparse census
-    * (absent weeks ARE zeros, the q670 discipline).
-    */
-  private def q685(s: SparkSession, dir: String): DataFrame = {
-    val d = weeklyDemand(s, dir).localCheckpoint(true)
-    val b = d.agg(min(col("week")).as("lo"), max(col("week")).as("hi"))
-      .head()
-    graft.operators.Relational.xyzClasses(
-      d, "l_partkey", "qty", b.getLong(1) - b.getLong(0) + 1L)
-  }
-
-  /** 2-component Gaussian mixture ([[graft.operators.Learn.gmm2]]):
-    * driver-paced EM on order totals in dollars — "is revenue one
-    * population or two", with the component shapes attached; the soft
-    * sibling of q659's hard k-means bands.
-    */
-  private def q686(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Learn.gmm2(
-      T(s, dir, "orders").select(
-        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS LONG) div 100")
-          .as("dollars")),
-      "dollars")
-
-  /** Difference-in-differences ([[graft.operators.Drift.diffInDiff]]):
-    * error-rate effect of a hash-assigned "treatment" net of both the
-    * group level gap and the common time shock — the quasi-experimental
-    * readout q283's randomized z-test can't give on observational
-    * splits.
-    */
-  private def q630(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "events").select(col("user_id"),
-      expr("ts div 1000000000").as("sec"),
-      (col("event_type") === "error").cast("long").as("y"))
-    val mid = e.agg(expr("(min(sec) + max(sec)) div 2").as("mid"))
-    graft.operators.Drift.diffInDiff(
-      e.crossJoin(broadcast(mid)),
-      pmod(conv(substring(md5(concat(lit("dd:"),
-        col("user_id").cast("string"))), 1, 13), 16, 10).cast("long"),
-        lit(2)) === 1L,
-      col("sec") > col("mid"),
-      col("y"))
-  }
-
-  /** Mixture quotas ([[graft.operators.Sharding.largestRemainder]]):
-    * a 10,000-doc sampling budget apportioned across sources at corpus
-    * proportions, Σquota = budget exactly — the data-mixture
-    * arithmetic in front of corpus sampling.
-    */
-  private def q631(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sharding.largestRemainder(
-      T(s, dir, "documents").select(col("source")), "source", 10000L)
-
-  /** Skip-gram pairs ([[graft.operators.TextPipeline.skipgramPairs]]):
-    * word2vec-style (center, context) training pairs with
-    * hash-deterministic negative samples — the training-example
-    * factory beside q156's vocab build.
-    */
-  private def q632(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.skipgramPairs(
-      T(s, dir, "documents"), "doc_id", "text")
-
-  /** Streaming Lorenz store
-    * ([[graft.streaming.StreamVerify.lorenzMaintenance]]): (group,
-    * value) census partials add; drained decile table ≡ batch q626
-    * (oracle verbatim).
-    */
-  private def q633(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "orders").select(col("o_orderkey"),
-      col("o_orderpriority").as("g"),
-      (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-        .cast("long").as("x"))
-    graft.streaming.StreamVerify.lorenzMaintenance(
-      s, stageHalves(s, dir, "q633", base, "o_orderkey"),
-      scratch(dir, "q633"))
-  }
-
-  /** Streaming paired-flow store
-    * ([[graft.streaming.StreamVerify.bowkerMaintenance]]):
-    * entity-partitioned batches each fold their own users' first/last
-    * pairs; drained symmetry test ≡ batch q580 (oracle verbatim).
-    */
-  private def q585(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "events")
-      .select(col("user_id"), col("ts"), col("event_id"),
-        col("event_type"))
-      .withColumn("par", col("user_id") % 2)
-    graft.streaming.StreamVerify.bowkerMaintenance(
-      s, stageHalves(s, dir, "q585", base, "par"), scratch(dir, "q585"))
-  }
-
-  /** Streaming diversity store
-    * ([[graft.streaming.StreamVerify.hillMaintenance]]): per-batch
-    * (type, user) censuses add; drained Hill profile ≡ batch q568
-    * (oracle verbatim).
-    */
-  private def q579(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "events").select(col("event_id"),
-      col("event_type").as("g"), col("user_id").as("u"))
-    graft.streaming.StreamVerify.hillMaintenance(
-      s, stageHalves(s, dir, "q579", base, "event_id"),
-      scratch(dir, "q579"), "event_type")
-      .orderBy(col("event_type"))
-  }
-
-  /** Streaming ordinal-association store
-    * ([[graft.streaming.StreamVerify.gkGammaMaintenance]]): per-batch
-    * (x, y) censuses add; drained gamma/Somers' D ≡ batch q566
-    * (oracle verbatim).
-    */
-  private def q573(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "orders").select(col("o_orderkey"),
-      substring(col("o_orderpriority"), 1, 1).cast("long").as("x"),
-      when(col("o_totalprice") < 50000, 0L)
-        .when(col("o_totalprice") < 150000, 1L)
-        .when(col("o_totalprice") < 300000, 2L).otherwise(3L).as("y"))
-    graft.streaming.StreamVerify.gkGammaMaintenance(
-      s, stageHalves(s, dir, "q573", base, "o_orderkey"),
-      scratch(dir, "q573"))
-  }
-
-  /** Language-mixture profile
-    * ([[graft.operators.TextPipeline.langMixture]]): per doc the marker
-    * posterior over the language set, its entropy, and a mixed flag —
-    * the code-switching rows q30's argmax silently misroutes.
-    */
-  private def q559(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.langMixture(
-      T(s, dir, "documents"), "doc_id", "text")
-      .orderBy(col("doc_id"))
-
-  /** Per-cohort Kaplan–Meier
-    * ([[graft.operators.Trend.kaplanMeierFromLives]]): censoring-correct
-    * retention curves per signup-week cohort — q72's raw retention
-    * treats still-active users as churned; this doesn't.
-    */
-  private def q560(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .select(col("user_id"), expr("ts div 1000000000").cast("long").as("sec"))
-    val b = ev.agg(min(col("sec")).as("lo"), max(col("sec")).as("hi")).head()
-    val lo = b.getLong(0)
-    val cutoff = lo + 2L * (b.getLong(1) - lo) / 3L
-    val lives = ev.groupBy(col("user_id"))
-      .agg(min(col("sec")).as("first"), max(col("sec")).as("last"))
-      .select(expr(s"(first - $lo) div 604800").as("cohort_week"),
-        expr("(last - first) div 3600").as("t"),
-        when(col("last") > cutoff, 0L).otherwise(1L).as("death"))
-    graft.operators.Trend.kaplanMeierFromLives(lives, "cohort_week")
-      .orderBy(col("cohort_week"), col("t"))
-  }
-
-  /** K-anonymity sweep ([[graft.operators.Privacy.kAnonSweep]]): the
-    * suppression-cost curve over candidate k — what q217's fixed-k
-    * anonymization costs at every other k, from one class-size census.
-    */
-  private def q557(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Privacy.kAnonSweep(
-      T(s, dir, "customer").select(col("c_nationkey"), col("c_mktsegment")),
-      Seq("c_nationkey", "c_mktsegment"), Seq(2, 5, 10, 25))
-
-  /** Quasi-identifier uniqueness risk
-    * ([[graft.operators.Privacy.uniquenessRisk]]): the share of
-    * customers UNIQUE under each declared column combo — the
-    * re-identification surface measured before anyone picks which
-    * columns to generalize.
-    */
-  private def q558(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Privacy.uniquenessRisk(
-      T(s, dir, "customer").select(col("c_nationkey"), col("c_mktsegment"),
-        expr("CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS LONG) div 10000")
-          .as("bal_bucket")),
-      Seq(("nation", Seq("c_nationkey")),
-        ("nation_segment", Seq("c_nationkey", "c_mktsegment")),
-        ("nation_segment_bal",
-          Seq("c_nationkey", "c_mktsegment", "bal_bucket"))))
-
-  /** STREAMING trend maintenance
-    * ([[graft.streaming.StreamVerify.trendOlsMaintenance]]): per-batch
-    * (type, hour) census partials add; the drained per-key OLS slopes
-    * equal batch q147 verbatim (shared oracle). Twenty-third
-    * self-maintaining surface.
-    */
-  private def q555(s: SparkSession, dir: String): DataFrame = {
-    val staged = scratch(dir, "q555_events")
-    val src = scratch(dir, "q555_src")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    parStage(3) { par =>
-      val side = s"$staged/_slice$par"
-      s.read.parquet(s"$dir/events.parquet")
-        .filter(col("event_id") % 3 === par)
-        .coalesce(1).write.mode("overwrite").parquet(side)
-      val part = new java.io.File(side).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("event slice write produced no part file"))
-      stageCopy(part,
-        java.nio.file.Paths.get(s"$src/slice$par.parquet"), par)
-    }
-    graft.streaming.StreamVerify.trendOlsMaintenance(
-      s, src, scratch(dir, "q555"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Upper tail dependence ([[graft.operators.Drift.tailDependence]]):
-    * do price and quantity extremes CO-OCCUR on line items —
-    * λ_U = P(price > p_q | qty > q_q) at 90/95/99, the co-extremes
-    * question q83's body-dominated correlation answers wrong.
-    */
-  private def q556(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.tailDependence(
-      T(s, dir, "lineitem").select(
-        (col("l_extendedprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("price_cents"),
-        col("l_quantity").cast("long").as("qty")),
-      "price_cents", "qty", Seq(90, 95, 99))
-
-  /** STREAMING stratified-ATT maintenance
-    * ([[graft.streaming.StreamVerify.strataAttMaintenance]]): per-batch
-    * per-stratum moment partials add; the drained causal readout equals
-    * batch q551 verbatim (shared oracle). Twenty-second self-maintaining
-    * surface — the experimentation stack's causal estimate joins its
-    * SRM/CUPED/Welch/QTE siblings at ingest cadence.
-    */
-  private def q553(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "orders").select(col("o_orderkey"),
-      col("o_orderpriority").as("s"),
-      (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-        .cast("long").as("cents"),
-      (pmod(conv(substring(md5(concat(lit("att:"),
-        col("o_orderkey").cast("string"))), 1, 13), 16, 10).cast("long"),
-        lit(2L)) === 0L).as("isa"))
-    val staged = scratch(dir, "q553_src")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(staged))
-    parStage(2) { par =>
-      val side = scratch(dir, s"q553_half$par")
-      base.filter(col("o_orderkey") % 2 === par).drop("o_orderkey")
-        .coalesce(1).write.mode("overwrite").parquet(side)
-      val part = new java.io.File(side).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("half write produced no part file"))
-      stageCopy(part,
-        java.nio.file.Paths.get(s"$staged/half$par.parquet"), par)
-    }
-    graft.streaming.StreamVerify.strataAttMaintenance(
-      s, staged, scratch(dir, "q553"))
-  }
-
-  /** Iceberg-layout TIME TRAVEL ([[graft.sources.IcebergLite.readAt]]):
-    * two exports of an advancing TxLake table leave both metadata chains
-    * on disk; each snapshot reads back through its OWN foreign chain,
-    * and the per-priority diff of the two reads is a construction fact
-    * of the staged commits.
-    */
-  private def q554(s: SparkSession, dir: String): DataFrame = {
-    val root = scratch(dir, "q554")
-    graft.sources.LocalFs.deleteRecursively(root)
-    val lake = s"$root/lake"
-    val ice = s"$root/ice"
-    val orders = T(s, dir, "orders").select(col("o_orderkey"),
-      col("o_orderpriority"))
-    graft.sources.TxLake.commit(s, lake,
-      orders.filter(col("o_orderkey") % 2 === 0))
-    val snap1 = graft.sources.IcebergLite.export(s, lake, ice)
-    graft.sources.TxLake.commit(s, lake,
-      orders.filter(col("o_orderkey") % 2 === 1))
-    val snap2 = graft.sources.IcebergLite.export(s, lake, ice)
-    val v1 = graft.sources.IcebergLite.readAt(s, ice, snap1)
-      .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n_v1"))
-    val v2 = graft.sources.IcebergLite.readAt(s, ice, snap2)
-      .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n_v2"))
-    v1.join(v2, Seq("o_orderpriority"))
-      .select(col("o_orderpriority"), col("n_v1"), col("n_v2"),
-        (col("n_v2") - col("n_v1")).as("added"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  /** Meta-analysis across strata ([[graft.operators.Drift
-    * .metaAnalysis]]): is the q551 effect ONE effect measured five times
-    * or five different effects — Cochran's Q, I², DL τ², and the
-    * random-effects re-pool over the per-priority arm effects.
-    */
-  private def q552(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.metaAnalysis(
-      T(s, dir, "orders").select(col("o_orderpriority"),
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"),
-        (pmod(conv(substring(md5(concat(lit("att:"),
-          col("o_orderkey").cast("string"))), 1, 13), 16, 10).cast("long"),
-          lit(2L)) === 0L).as("isa")),
-      "o_orderpriority", col("isa"), "cents")
-
-  /** STREAMING Hodges–Lehmann maintenance
-    * ([[graft.streaming.StreamVerify.hlMaintenance]]): per-batch value
-    * censuses add; the drained shift estimate equals batch q548 verbatim
-    * (shared oracle). Twentieth self-maintaining surface.
-    */
-  private def q549(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "orders")
-      .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-      .select(col("o_orderkey"),
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("v"),
-        (col("o_orderpriority") === "1-URGENT").as("isa"))
-    val staged = scratch(dir, "q549_src")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(staged))
-    parStage(2) { par =>
-      val side = scratch(dir, s"q549_half$par")
-      base.filter(col("o_orderkey") % 2 === par).drop("o_orderkey")
-        .coalesce(1).write.mode("overwrite").parquet(side)
-      val part = new java.io.File(side).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("half write produced no part file"))
-      stageCopy(part,
-        java.nio.file.Paths.get(s"$staged/half$par.parquet"), par)
-    }
-    graft.streaming.StreamVerify.hlMaintenance(s, staged, scratch(dir, "q549"))
-  }
-
-  /** STREAMING CUPED maintenance
-    * ([[graft.streaming.StreamVerify.cupedMaintenance]]): per-user
-    * (pre, post) totals fold into a standing store via the merge-on-read
-    * upsert (addition is NOT replay-idempotent — the exactly-once tag is
-    * load-bearing); the drained CUPED readout equals batch q395 verbatim
-    * (shared oracle). Twenty-first self-maintaining surface.
-    */
-  private def q550(s: SparkSession, dir: String): DataFrame = {
-    val staged = scratch(dir, "q550_events")
-    val src = scratch(dir, "q550_src")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    parStage(3) { par =>
-      val side = s"$staged/_slice$par"
-      s.read.parquet(s"$dir/events.parquet")
-        .filter(col("event_id") % 3 === par)
-        .coalesce(1).write.mode("overwrite").parquet(side)
-      val part = new java.io.File(side).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("event slice write produced no part file"))
-      stageCopy(part,
-        java.nio.file.Paths.get(s"$src/slice$par.parquet"), par)
-    }
-    graft.streaming.StreamVerify.cupedMaintenance(s, src, scratch(dir, "q550"))
-      .orderBy(col("arm"))
-  }
-
-  /** Stratified ATT ([[graft.operators.Drift.strataAtt]]): the effect ON
-    * THE TREATED under priority-stratum adjustment, with treated-share
-    * weights (the estimand q462's population weights don't give) and the
-    * stratified SE — unmatchable strata drop with their mass reported.
-    */
-  private def q551(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.strataAtt(
-      T(s, dir, "orders").select(col("o_orderpriority"),
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"),
-        (pmod(conv(substring(md5(concat(lit("att:"),
-          col("o_orderkey").cast("string"))), 1, 13), 16, 10).cast("long"),
-          lit(2L)) === 0L).as("isa")),
-      "o_orderpriority", col("isa"), "cents")
-
-  /** STREAMING Theil's-U maintenance
-    * ([[graft.streaming.StreamVerify.theilsUMaintenance]]): per-batch
-    * joint censuses add, both marginals derive from the joint, drained
-    * association equals batch q544 verbatim (shared oracle). Nineteenth
-    * self-maintaining surface.
-    */
-  private def q545(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_orderpriority").as("x"),
-        col("o_orderstatus").as("y"))
-    val staged = scratch(dir, "q545_src")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(staged))
-    parStage(2) { par =>
-      val side = scratch(dir, s"q545_half$par")
-      base.filter(col("o_orderkey") % 2 === par).drop("o_orderkey")
-        .coalesce(1).write.mode("overwrite").parquet(side)
-      val part = new java.io.File(side).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("half write produced no part file"))
-      stageCopy(part,
-        java.nio.file.Paths.get(s"$staged/half$par.parquet"), par)
-    }
-    graft.streaming.StreamVerify.theilsUMaintenance(
-      s, staged, scratch(dir, "q545"))
-  }
-
-  /** Raking / iterative proportional fitting
-    * ([[graft.operators.Sampling.rake]]): calibrate (source, lang) cell
-    * weights so the weighted marginals hit equal-mass-per-source while
-    * keeping the observed language mix — the mixture-calibration step
-    * q225's schedule assumes someone already ran.
-    */
-  private def q546(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sampling.rake(
-      T(s, dir, "documents").select(col("source"), col("lang")),
-      "source", "lang", rounds = 3)
-      .orderBy(col("r"), col("c"))
-
-  /** Attribute modularity ([[graft.operators.Graph.modularity]]): does
-    * BRAND explain the part co-purchase graph's wiring — Newman's Q for
-    * the brand partition, the quantitative check on any "communities =
-    * X" claim (q536's rich-club asks about hubs; this asks about a
-    * labeling).
-    */
-  private def q543(s: SparkSession, dir: String): DataFrame = {
-    // per-order pair rows via the collect_list expansion (one exchange
-    // fewer than the order-keyed self-join; pair set identical)
-    val pairs = graft.operators.Affinity.basketPairRows(
-        T(s, dir, "lineitem"), "l_orderkey", "l_partkey")
-      .select(col("item_a").as("id_a"), col("item_b").as("id_b"))
-      .distinct()
-    graft.operators.Graph.modularity(pairs,
-      T(s, dir, "part").select(col("p_partkey").as("node"),
-        col("p_brand").as("community")))
-  }
-
-  /** Theil's U ([[graft.operators.Drift.theilsU]]): the DIRECTIONAL
-    * priority↔status association — U(X|Y) vs U(Y|X), the asymmetry
-    * q425's Cramér's V and q256's MI can't express.
-    */
-  private def q544(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.theilsU(
-      T(s, dir, "orders").select(col("o_orderpriority"),
-        col("o_orderstatus")),
-      "o_orderpriority", "o_orderstatus")
-
-  /** STREAMING James–Stein maintenance
-    * ([[graft.streaming.StreamVerify.jamesSteinMaintenance]]): per-batch
-    * group moment partials land exactly-once, moments add, drained
-    * shrinkage equals batch q538 verbatim (shared oracle). Seventeenth
-    * self-maintaining surface.
-    */
-  private def q540(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "customer")
-      .join(T(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"), col("n_name").as("g"),
-        (col("c_acctbal").cast(DecimalType(12, 2)) * 100).cast("long")
-          .as("cents"))
-    val staged = scratch(dir, "q540_src")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(staged))
-    parStage(2) { par =>
-      val side = scratch(dir, s"q540_half$par")
-      base.filter(col("c_custkey") % 2 === par).drop("c_custkey")
-        .coalesce(1).write.mode("overwrite").parquet(side)
-      val part = new java.io.File(side).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("half write produced no part file"))
-      stageCopy(part,
-        java.nio.file.Paths.get(s"$staged/half$par.parquet"), par)
-    }
-    graft.streaming.StreamVerify.jamesSteinMaintenance(
-      s, staged, scratch(dir, "q540"))
-  }
-
-  /** Exact Wasserstein-1 ([[graft.operators.Drift.wasserstein1]]):
-    * transport distance between urgent and low order totals — how much
-    * mass must move how far, beside q385's KS supremum and q470's CvM.
-    */
-  private def q541(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.wasserstein1(
-      T(s, dir, "orders")
-        .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-        .select((col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("cents"),
-          (col("o_orderpriority") === "1-URGENT").as("isa")),
-      "cents", col("isa"))
-
-  /** STREAMING Wasserstein-1 maintenance
-    * ([[graft.streaming.StreamVerify.w1Maintenance]]): per-batch value
-    * censuses add; drained transport distance equals batch q541 verbatim
-    * (shared oracle). Eighteenth self-maintaining surface.
-    */
-  private def q542(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "orders")
-      .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-      .select(col("o_orderkey"),
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100)
-          .cast("long").as("v"),
-        (col("o_orderpriority") === "1-URGENT").as("isa"))
-    val staged = scratch(dir, "q542_src")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(staged))
-    parStage(2) { par =>
-      val side = scratch(dir, s"q542_half$par")
-      base.filter(col("o_orderkey") % 2 === par).drop("o_orderkey")
-        .coalesce(1).write.mode("overwrite").parquet(side)
-      val part = new java.io.File(side).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("half write produced no part file"))
-      stageCopy(part,
-        java.nio.file.Paths.get(s"$staged/half$par.parquet"), par)
-    }
-    graft.streaming.StreamVerify.w1Maintenance(s, staged, scratch(dir, "q542"))
-  }
-
-  /** James–Stein shrinkage ([[graft.operators.Drift.jamesStein]]): each
-    * nation's mean balance partially pooled toward the grand mean with
-    * the empirical-Bayes factor read off the q458 one-way decomposition
-    * — the fix for "the smallest nation tops the leaderboard".
-    */
-  private def q538(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.jamesStein(
-      T(s, dir, "customer")
-        .join(T(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-        .select(col("n_name"),
-          (col("c_acctbal").cast(DecimalType(12, 2)) * 100).cast("long")
-            .as("cents")),
-      "n_name", "cents")
-
-  /** Label-noise audit ([[graft.operators.Similarity.labelNoiseAudit]]):
-    * per-label exact centroids, every vector re-assigned by cosine, the
-    * label × assigned confusion — the screen run before the label column
-    * trains anything.
-    */
-  private def q539(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Similarity.labelNoiseAudit(
-      T(s, dir, "embeddings"), "vec_id", "embedding", "label")
-      .orderBy(col("label"), col("assigned"))
-
-  /** Heaps'-law fit ([[graft.operators.TextPipeline.heapsLaw]]):
-    * vocabulary-growth exponent over the corpus in doc order — the
-    * "are junk types still flooding in" monitor beside q510's coverage
-    * curve; doc positions and both running totals on GlobalOrder.
-    */
-  private def q535(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.heapsLaw(
-      T(s, dir, "documents"), "doc_id", "text")
-
-  /** Rich-club coefficient ([[graft.operators.Graph.richClub]]) of the
-    * part co-purchase graph (q123's same-order pairs): do high-degree
-    * parts preferentially co-occur with each other — the hub-clique
-    * structure q452's global assortativity averages away.
-    */
-  private def q536(s: SparkSession, dir: String): DataFrame = {
-    // per-order pair rows via the collect_list expansion (one exchange
-    // fewer than the order-keyed self-join; pair set identical)
-    val pairs = graft.operators.Affinity.basketPairRows(
-        T(s, dir, "lineitem"), "l_orderkey", "l_partkey")
-      .select(col("item_a").as("id_a"), col("item_b").as("id_b"))
-      .distinct()
-    graft.operators.Graph.richClub(pairs, Seq(1, 2, 4, 8))
-  }
-
-  /** Benjamini–Yekutieli gate ([[graft.operators.Drift.byFdr]]) over
-    * q420's per-nation Welch-z p family: FDR control valid under
-    * ARBITRARY dependence (the harmonic-shrunk critical line) — the
-    * conservative sibling completing the BH (q420) / Holm (q512) /
-    * q-value (q524) multiplicity shelf.
-    */
-  private def q537(s: SparkSession, dir: String): DataFrame = {
-    val d38 = DecimalType(38, 0)
-    val c = T(s, dir, "customer")
-      .join(T(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-      .select(col("n_name"),
-        (col("c_acctbal").cast(DecimalType(12, 2)) * 100).cast("long")
-          .as("cents"))
-    val cts = col("cents").cast(d38)
-    val g = c.groupBy(col("n_name")).agg(count(lit(1)).as("na"),
-      sum(cts).as("sa"), sum(cts * cts).as("saa"))
-    val t = c.agg(count(lit(1)).as("nt"), sum(cts).as("st"),
-      sum(cts * cts).as("stt"))
-    def dbl(x: Column): Column = x.cast("double")
-    val j = g.crossJoin(broadcast(t)).select(col("n_name"), col("na"),
-      dbl(col("sa")).as("saD"), dbl(col("saa")).as("saaD"),
-      (col("nt") - col("na")).as("nb"),
-      dbl(col("st") - col("sa")).as("sbD"),
-      dbl(col("stt") - col("saa")).as("sbbD"))
-    val na = dbl(col("na"))
-    val nb = dbl(col("nb"))
-    val va = (na * col("saaD") - col("saD") * col("saD")) /
-      (na * (na - 1.0))
-    val vb = (nb * col("sbbD") - col("sbD") * col("sbD")) /
-      (nb * (nb - 1.0))
-    val z = (col("saD") / na - col("sbD") / nb) / sqrt(va / na + vb / nb)
-    val withP = j.select(col("n_name"), round(z, 6).as("zr"),
-      round(graft.operators.Drift.normalTailP2(z), 9).as("p"))
-    graft.operators.Drift
-      .byFdr(withP.select(col("n_name"), col("p")), "n_name", "p", 0.05)
-      .join(withP.select(col("n_name").as("k"), col("zr")), Seq("k"))
-      .select(col("k").as("nation"), col("zr").as("z"), col("p"),
-        col("p_rank"), col("h_m"), col("by_crit"), col("rejected"))
-      .orderBy(col("p_rank"))
-  }
-
-  /** Fleiss' kappa ([[graft.operators.Drift.fleissKappa]]): each user's
-    * first three events (by time, then id) are three "ratings" of the
-    * category event_type — multi-rater agreement on what a user does,
-    * beside q447's two-rater Cohen κ. Users with fewer than three events
-    * are excluded so the fixed-panel contract holds.
-    */
-  private def q532(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("sec"), col("event_id"))
-    val cw = Window.partitionBy(col("user_id"))
-    val first3 = T(s, dir, "events")
-      .select(col("user_id"), col("event_type"), col("event_id"),
-        expr("ts div 1000000000").cast("long").as("sec"))
-      .withColumn("__rn", row_number().over(w))
-      .withColumn("__cnt", count(lit(1)).over(cw))
-      .filter(col("__rn") <= 3 && col("__cnt") >= 3)
-    graft.operators.Drift.fleissKappa(first3, "user_id", "event_type", n = 3)
-  }
-
-  /** Nelson–Aalen cumulative hazard ([[graft.operators.Trend
-    * .nelsonAalen]]): q321's KM census re-read as additive hazard —
-    * H(t) = Σ d/n_risk with the Fleming–Harrington survival exp(−H),
-    * the is-churn-accelerating view the survival curve's shape hides.
-    */
-  private def q533(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .select(col("user_id"), expr("ts div 1000000000").cast("long").as("sec"))
-    val b = ev.agg(min(col("sec")).as("lo"), max(col("sec")).as("hi")).head()
-    val cutoff = b.getLong(0) + 2L * (b.getLong(1) - b.getLong(0)) / 3L
-    graft.operators.Trend.nelsonAalen(
-      graft.operators.Trend.kaplanMeier(ev, "user_id", "sec", cutoff))
-      .orderBy(col("t"))
-  }
-
-  /** Gehan–Breslow–Wilcoxon test ([[graft.operators.Trend
-    * .gehanWilcoxon]]): q520's log-rank re-weighted by the at-risk
-    * share — early churn differences dominate where log-rank weighs all
-    * event times equally.
-    */
-  private def q534(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .select(col("user_id"), expr("ts div 1000000000").cast("long").as("sec"))
-    val b = ev.agg(min(col("sec")).as("lo"), max(col("sec")).as("hi")).head()
-    val cutoff = b.getLong(0) + 2L * (b.getLong(1) - b.getLong(0)) / 3L
-    graft.operators.Trend.gehanWilcoxon(ev, "user_id", "sec", cutoff,
-      pmod(conv(substring(md5(concat(lit("lr1:"),
-        col("user_id").cast("string"))), 1, 13), 16, 10).cast("long"),
-        lit(2)) === 0)
-  }
-
-  /** Merge-on-read MERGE ([[graft.sources.TxLake.upsertKeysDv]]) as a
-    * batch surface: base customer table, an UPDATE wave (+11 cents on
-    * every third key) and an INSERT wave (shadow keys for every seventh)
-    * land as two atomic delta commits — appended rows + deletion-vector
-    * masks in one entry each, NO data file rewritten (where q78's
-    * copy-on-write MERGE rewrites every affected file) — then OPTIMIZE
-    * materializes the masks into a clean snapshot. The readout
-    * aggregates the post-OPTIMIZE table; the oracle computes the merged
-    * state directly.
-    */
-  private def q529(s: SparkSession, dir: String): DataFrame = {
-    val root = scratch(dir, "q529")
-    graft.sources.LocalFs.deleteRecursively(root)
-    val lake = s"$root/lake"
-    val cust = T(s, dir, "customer").select(col("c_custkey"),
-      col("c_mktsegment"),
-      (col("c_acctbal").cast(DecimalType(12, 2)) * 100)
-        .cast("long").as("cents"))
-    graft.sources.TxLake.commit(s, lake, cust)
-    graft.sources.TxLake.upsertKeysDv(s, lake,
-      cust.filter(col("c_custkey") % 3 === 0)
-        .withColumn("cents", col("cents") + 11L), "c_custkey")
-    graft.sources.TxLake.upsertKeysDv(s, lake,
-      cust.filter(col("c_custkey") % 7 === 0)
-        .select((col("c_custkey") + 10000000L).as("c_custkey"),
-          col("c_mktsegment"), (col("cents") - 5L).as("cents")),
-      "c_custkey")
-    require(graft.sources.TxLake.dvFiles(lake).nonEmpty,
-      "the update wave must have landed deletion vectors")
-    graft.sources.TxLake.optimize(s, lake, targetFiles = 4)
-    graft.sources.TxLake.readSnapshot(s, lake)
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("total_cents"))
-      .orderBy(col("c_mktsegment"))
-  }
-
-  /** STREAMING shingle-index maintenance
-    * ([[graft.streaming.StreamVerify.repeatedSpansMaintenance]]):
-    * documents arrive as two micro-batches, each appending its
-    * (doc, pos, shingle) rows to a standing index exactly-once; the
-    * drained census + island merge equals batch q527 verbatim (shared
-    * oracle) — substring dedup at ingest cadence. Fourteenth
-    * self-maintaining surface.
-    */
-  private def q530(s: SparkSession, dir: String): DataFrame = {
-    val staged = scratch(dir, "q530_docs")
-    parStage(2) { par =>
-      T(s, dir, "documents").filter(col("doc_id") % 2 === par)
-        .select(col("doc_id"), col("text"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$staged/_half$par")
-    }
-    val src = scratch(dir, "q530_src")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    Seq(0, 1).foreach { par =>
-      val part = new java.io.File(s"$staged/_half$par").listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("doc half write produced no part file"))
-      stageCopy(part,
-        java.nio.file.Paths.get(s"$src/half$par.parquet"), par)
-    }
-    graft.streaming.StreamVerify.repeatedSpansMaintenance(
-      s, src, scratch(dir, "q530"), k = 8, minOcc = 2)
-      .orderBy(col("doc_id"), col("start_tok"))
-  }
-
-  /** STREAMING survival maintenance
-    * ([[graft.streaming.StreamVerify.survivalMaintenance]]): per-user
-    * lifetime bounds fold into a standing store via the merge-on-read
-    * upsert (min/max merging commutes — batch split invisible), and the
-    * drained log-rank equals batch q520 verbatim (shared oracle).
-    * Fifteenth self-maintaining surface; first streaming consumer of
-    * the atomic delta-MERGE beside q219's components.
-    */
-  private def q531(s: SparkSession, dir: String): DataFrame = {
-    val staged = scratch(dir, "q531_events")
-    val src = scratch(dir, "q531_src")
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
-    parStage(3) { par =>
-      val side = s"$staged/_slice$par"
-      s.read.parquet(s"$dir/events.parquet")
-        .filter(col("event_id") % 3 === par)
-        .coalesce(1).write.mode("overwrite").parquet(side)
-      val part = new java.io.File(side).listFiles()
-        .find(f => f.getName.startsWith("part-") &&
-          f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("event slice write produced no part file"))
-      stageCopy(part,
-        java.nio.file.Paths.get(s"$src/slice$par.parquet"), par)
-    }
-    graft.streaming.StreamVerify.survivalMaintenance(
-      s, src, scratch(dir, "q531"))
-  }
-
-  /** Substring-level repeated-span dedup
-    * ([[graft.operators.Dedup.repeatedSpans]]): every maximal >= 8-token
-    * span whose every 8-shingle occurs at least twice in the corpus — the
-    * Lee-et-al-style repeated-passage cut between document dedup (q21)
-    * and chunk dedup (q179), found by shingle-anchor census + island
-    * merge, never a suffix array. The oracle replays the same xorshift
-    * shingle fold and gaps-and-islands extension in SQL.
-    */
-  private def q527(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Dedup.repeatedSpans(
-      T(s, dir, "documents"), "doc_id", "text", k = 8, minOcc = 2)
-      .orderBy(col("doc_id"), col("start_tok"))
-
-  /** L-moments ([[graft.operators.Relational.lMoments]]): λ₁, λ₂ and the
-    * robust L-CV of order prices per priority — the dispersion family
-    * that stays stable on heavy tails where classical variance explodes;
-    * doubled-tie-rank census makes the λ₂ numerator a pure integer.
-    */
-  private def q469(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.lMoments(
-      T(s, dir, "orders").select(col("o_orderpriority"),
-        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-          .as("cents")),
-      "o_orderpriority", "cents")
-      .orderBy(col("g"))
-
-  /** Two-sample Cramér–von Mises
-    * ([[graft.operators.Relational.cramerVonMises]]): integrated squared
-    * CDF difference between view and click values — registers shelf-wide
-    * shifts q385's supremum-only KS misses; cross-multiplied integer
-    * census arithmetic to one pinned T.
-    */
-  private def q470(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Relational.cramerVonMises(
-      T(s, dir, "events").filter(col("event_type").isin("view", "click"))
-        .select((col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-            .as("cents"),
-          (col("event_type") === "view").as("isa")),
-      "cents", col("isa"))
-
-  /** Streaming JSD maintenance
-    * ([[graft.streaming.StreamVerify.jsdMaintenance]]): q455's pairwise
-    * distribution matrix as an ingestion side effect — per-batch
-    * (type, hour-of-day, n) census partials land exactly-once; counts
-    * add, the drained matrix reads through jsdMatrixFromCensus and
-    * shares q455's oracle verbatim. Sixth self-maintaining surface.
-    */
-  private def q471(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.jsdMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q471"))
-
-  /** PMI collocations ([[graft.operators.TextPipeline.pmiCollocations]]):
-    * top-30 adjacent word pairs co-occurring far beyond their margins —
-    * phrase DISCOVERY beside q434's RAKE scoring; ln over exact integer
-    * cross-products, full-census margins, min-support 3.
-    */
-  private def q466(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.pmiCollocations(
-        T(s, dir, "documents"), "doc_id", "text", minCount = 3, topN = 30)
-      .orderBy(col("rank"))
-
-  /** Embedding-truncation fidelity
-    * ([[graft.operators.Similarity.truncationFidelity]]): per query,
-    * RBO@10 between the 64-dim cosine top-10 and the 16-dim truncated
-    * top-10 — the matryoshka serve-cost decision table; two knnBrute
-    * scans, max-rank census, pinned 0.9-power weights.
-    */
-  private def q467(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    graft.operators.Similarity.truncationFidelity(
-        emb, emb.filter(col("vec_id") < 8), "vec_id", "embedding",
-        dims = 16, k = 10)
-      .orderBy(col("qid"))
-  }
-
-  /** Rule-based multi-touch credits
-    * ([[graft.operators.Attribution.positionCredits]]): first/last/
-    * linear/U-shaped per channel over converting users' pre-purchase
-    * touches (the q281 journey derivation) — the four dashboard
-    * heuristics beside the model-based q281 Markov and q343-family
-    * Shapley; exact counts + 1e-9-grid rational credits.
-    */
-  private def q468(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "events").select(col("user_id"), col("event_type"),
-      expr("ts div 1000000000").as("sec"), col("event_id"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("sec"), col("event_id"))
-    val o = e.withColumn("rn", row_number().over(w))
-    val fp = o.filter(col("event_type") === "purchase")
-      .groupBy(col("user_id")).agg(min(col("rn")).as("prn"))
-    val touches = o.join(fp, Seq("user_id"))
-      .filter(col("rn") < col("prn"))
-      .select(col("user_id"), col("rn"), col("event_type"))
-    graft.operators.Attribution.positionCredits(touches,
-        "user_id", "rn", "event_type")
-      .orderBy(col("ch"))
-  }
-
-  /** Croston's intermittent-demand forecast
-    * ([[graft.operators.Trend.crostonPerKey]]): weekly part demand is
-    * SPARSE (most part-weeks are zero) — Croston smooths sizes and
-    * inter-demand intervals separately where Holt would forecast
-    * mostly-zero noise; one HOF fold per part over demand events only,
-    * α = 0.5, recursive-CTE replay with explicit anchor casts.
-    */
-  private def q463(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.crostonPerKey(weeklyDemand(s, dir),
-        "l_partkey", "week", "qty")
-      .orderBy(col("l_partkey"))
-
-  /** SBC demand classification ([[graft.operators.Trend.sbcClassify]]):
-    * route each part's demand series to the right forecaster —
-    * smooth/intermittent/erratic/lumpy from (ADI, CV²) at the standard
-    * 1.32/0.49 cutoffs; exact census moments, pinned compares.
-    */
-  private def q464(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Trend.sbcClassify(weeklyDemand(s, dir),
-        "l_partkey", "week", "qty")
-      .orderBy(col("l_partkey"))
-
-  private def weeklyDemand(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "lineitem")
-      .groupBy(col("l_partkey"),
-        expr("CAST(datediff(CAST(l_shipdate AS DATE), DATE'1970-01-01') AS BIGINT) div 7")
-          .as("week"))
-      .agg(sum(col("l_quantity")).cast("long").as("qty"))
-
-  /** Pinball-loss evaluation ([[graft.operators.Trend.pinballEval]]):
-    * score each event type's train-half p90 as a quantile forecast over
-    * the test half — the calibration-aware metric a point-MAE can't
-    * give; exact census order-stat forecast, 0.9·integer terms on the
-    * 1e-9 grid.
-    */
-  private def q465(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("event_type"),
-        expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Trend.pinballEval(hourly, "event_type", "hid", "cents")
-      .orderBy(col("event_type"))
-  }
-
-  /** Rank-biased overlap
-    * ([[graft.operators.Relational.rankBiasedOverlap]]): split-half
-    * stability of the top-10 parts-by-revenue ranking (even vs odd
-    * orders) — the top-weighted ranking-drift number a dashboard needs
-    * where plain overlap@k misreads; pinned 0.9-power weights, exact
-    * max-rank census, 1e-9 terms.
-    */
-  private def q461(s: SparkSession, dir: String): DataFrame = {
-    val li = T(s, dir, "lineitem").join(T(s, dir, "orders"),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("l_partkey"), pmod(col("o_orderkey"), lit(2L)).as("half"),
-        expr("CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-          .as("cents"))
-    // top-10 via TakeOrdered (orderBy+limit — no single-partition window
-    // over the full part domain), then the rank window runs on 10 rows;
-    // (rev desc, l_partkey) is a total order so the result is identical
-    def top(h: Long): DataFrame = li.filter(col("half") === h)
-      .groupBy(col("l_partkey")).agg(sum(col("cents")).as("rev"))
-      .orderBy(col("rev").desc, col("l_partkey")).limit(10)
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("rev").desc, col("l_partkey"))).cast("long"))
-    graft.operators.Relational.rankBiasedOverlap(
-      top(0), top(1), "l_partkey", "rnk", k = 10)
-  }
-
-  /** Post-stratified estimator ([[graft.operators.Sampling.postStratify]]):
-    * mean customer spend reweighted to the KNOWN per-nation customer
-    * population — the survey correction for "buyers over-represent some
-    * nations"; exact stratum moments, 1e-9 grid terms, unsampled strata
-    * reported (not silently renormalized).
-    */
-  private def q462(s: SparkSession, dir: String): DataFrame = {
-    val spend = T(s, dir, "orders").groupBy(col("o_custkey"))
-      .agg(expr(
-        "CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT)")
-        .as("cents"))
-    val sample = spend.join(T(s, dir, "customer"),
-        col("o_custkey") === col("c_custkey"))
-      .select(col("c_nationkey"), col("cents"))
-    graft.operators.Sampling.postStratify(sample,
-        T(s, dir, "customer"), "c_nationkey", "cents")
-      .orderBy(col("h"))
-  }
-
-  /** Correlation matrix ([[graft.operators.Relational.corrMatrix]]):
-    * all-pairs Pearson between the per-user activity metrics — which
-    * features move together, the numeric companion of q453's balance
-    * table; entity-keyed pair join (k²/2 per entity, k = 3), exact
-    * decimal moments, pinned r per pair.
-    */
-  private def q457(s: SparkSession, dir: String): DataFrame = {
-    val users = T(s, dir, "events")
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        (sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-          .as("cents"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("n_purchases"))
-    graft.operators.Relational.corrMatrix(users, "user_id",
-        Seq("n_events", "cents", "n_purchases"))
-      .orderBy(col("ma"), col("mb"))
-  }
-
-  /** Intraclass correlation ICC(1) ([[graft.operators.Drift.icc]]): how
-    * much of the order-price spread is BETWEEN priorities — the design
-    * effect / clustering number read off the same one-way decomposition
-    * as q408's ANOVA; unbalanced-design n₀, pinned finishes.
-    */
-  private def q458(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.icc(
-      T(s, dir, "orders").select(
-        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-          .as("cents"),
-        col("o_orderpriority")),
-      "cents", "o_orderpriority")
-
-  /** Negative-binomial MoM fit ([[graft.operators.Trend.negbinFit]]):
-    * the parameter step after q456 says "overdispersed" — r̂ = m²/(v−m),
-    * p̂ = m/v per event type's hourly counts, the NB whose alert bands
-    * fit bursty series; NULL parameters when not overdispersed.
-    */
-  private def q459(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("event_type"),
-        expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg(count(lit(1)).as("cnt"))
-    graft.operators.Trend.negbinFit(hourly, "event_type", "cnt")
-      .orderBy(col("event_type"))
-  }
-
-  /** Column entropy profile ([[graft.operators.Profiling.entropyProfile]]):
-    * distinct count, Shannon entropy and normalized entropy per orders
-    * column — the "how identifying / how skewed" reading a distinct
-    * count hides; c·ln c terms on the 1e-9 grid, decimal-summed.
-    */
-  private def q460(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Profiling.entropyProfile(
-      T(s, dir, "orders"),
-      Seq("o_orderstatus", "o_orderpriority", "o_custkey"))
-      .orderBy(col("col_name"))
-
-  /** Streaming XmR maintenance
-    * ([[graft.streaming.StreamVerify.xmrMaintenance]]): q446's control
-    * chart kept current as an ingestion side effect — per-batch hourly
-    * cents-census partials land exactly-once; sums add, the drained
-    * chart shares q446's oracle verbatim. Fifth self-maintaining
-    * surface; the moving-range pass runs only at read time over the
-    * hour-domain store.
-    */
-  private def q454(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.xmrMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q454"))
-
-  /** Pairwise Jensen–Shannon divergence matrix
-    * ([[graft.operators.Drift.jsdMatrix]]): how different every pair of
-    * event types' hour-of-day profiles is on the symmetric bounded
-    * [0, ln 2] scale — the all-pairs distribution-similarity table for
-    * mixing/shift decisions (q23's PSI compares exactly two slices);
-    * ln over exact integer cross-ratios on the 1e-9 grid.
-    */
-  private def q455(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.jsdMatrix(
-      T(s, dir, "events").select(col("event_type"),
-        pmod(expr("(ts div 1000000000) div 3600"), lit(24L)).as("hod")),
-      "event_type", "hod")
-      .orderBy(col("ka"), col("kb"))
-
-  /** Overdispersion check ([[graft.operators.Trend.dispersionCheck]]):
-    * variance-to-mean ratio of each event type's hourly counts + the
-    * Poisson dispersion statistic — the modeling gate before fitting
-    * ±k√λ alert bands (VMR ≫ 1 needs an empirical band instead);
-    * exact integer moments, pinned finish.
-    */
-  private def q456(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("event_type"),
-        expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg(count(lit(1)).as("cnt"))
-    graft.operators.Trend.dispersionCheck(hourly, "event_type", "cnt")
-      .orderBy(col("event_type"))
-  }
-
-  /** Duplication profile ([[graft.operators.Dedup.dupSizeProfile]]): the
-    * cluster-size histogram of exact duplicates — how much of the corpus
-    * is the same document repeated s times, the one-table summary read
-    * before choosing a dedup policy; two map-side-combined aggregations,
-    * shares as pinned divisions.
-    */
-  private def q451(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Dedup.dupSizeProfile(
-        T(s, dir, "events").select(col("props"))
-          .unionByName(T(s, dir, "documents").select(col("text").as("props"))),
-        "props")
-      .orderBy(col("cluster_size"))
-
-  /** Degree assortativity ([[graft.operators.Graph.degreeAssortativity]]):
-    * do high-degree customers trade with high-degree suppliers — Newman's
-    * endpoint-degree correlation over the distinct customer–supplier
-    * edge list (supplier ids negated, the q270 convention); exact
-    * integer moment sums, one pinned correlation.
-    */
-  private def q452(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Graph.degreeAssortativity(
-      T(s, dir, "lineitem").join(T(s, dir, "orders"),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey").as("src"), (-col("l_suppkey")).as("dst"))
-        .distinct())
-
-  /** Covariate balance ([[graft.operators.Drift.covariateBalance]]):
-    * standardized mean differences of per-user activity covariates
-    * across a deterministic 50/50 split — the covariate-MIX health check
-    * beside q390's count-level SRM; exact moments, |SMD| < 0.1 flags.
-    */
-  private def q453(s: SparkSession, dir: String): DataFrame = {
-    val users = T(s, dir, "events")
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        (sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-          .as("cents"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("n_purchases"))
-    graft.operators.Drift.covariateBalance(users,
-        pmod(col("user_id"), lit(2L)) === 0L,
-        Seq("n_events", "cents", "n_purchases"))
-      .orderBy(col("cov"))
-  }
-
-  /** Cohen's kappa ([[graft.operators.Drift.cohenKappa]]):
-    * chance-corrected agreement between the "urgent/high priority" and
-    * "fulfilled status" flags — how much the two binary signals agree
-    * beyond what their base rates force; pure-integer cross-multiplied
-    * κ, one pinned division.
-    */
-  private def q447(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.cohenKappa(
-      T(s, dir, "orders"),
-      expr("substring(o_orderpriority, 1, 1) IN ('1','2')"),
-      col("o_orderstatus") === "F")
-
-  /** Wald–Wolfowitz runs test ([[graft.operators.Drift.runsTest]]): is
-    * each event type's hourly above-mean/below-mean sequence RANDOM or
-    * does it cluster into regimes — the order-sensitive complement of
-    * the distribution tests; the flag is the exact integer compare
-    * v·n > S, runs counted in one lag pass, pinned Z.
-    */
-  private def q448(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("event_type"),
-        expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
-    val wk = Window.partitionBy(col("event_type"))
-    val flagged = hourly
-      .withColumn("nk", count(lit(1)).over(wk))
-      .withColumn("sk", sum(col("cents")).over(wk))
-      .select(col("event_type"), col("hid"),
-        (col("cents") * col("nk") > col("sk")).as("above"))
-    graft.operators.Drift.runsTest(flagged, "event_type", "hid",
-        col("above"))
-      .orderBy(col("k"))
-  }
-
-  /** Chapman capture–recapture
-    * ([[graft.operators.Sketches.captureRecapture]]): estimate the TOTAL
-    * user population — including users neither window saw — from the
-    * first-half/second-half observation overlap; the coverage estimator
-    * count-distinct structurally can't produce, with the closed-form
-    * Chapman CI.
-    */
-  private def q449(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "events")
-      .select(col("user_id"), expr("ts div 1000000000").as("sec"))
-    val b = e.agg(min(col("sec")), max(col("sec"))).head()
-    val mid = (b.getLong(0) + b.getLong(1)) / 2
-    graft.operators.Sketches.captureRecapture(
-      e.filter(col("sec") <= mid), e.filter(col("sec") > mid), "user_id")
-  }
-
-  /** Bland–Altman agreement ([[graft.operators.Reconcile.blandAltman]]):
-    * order header price vs the order's summed line prices — bias and
-    * 95% limits of agreement between the two "measurements" of the same
-    * order, plus the outside-limits count; the calibrated follow-up to
-    * q348's whether-they-differ fingerprints.
-    */
-  private def q450(s: SparkSession, dir: String): DataFrame = {
-    val li = T(s, dir, "lineitem").groupBy(col("l_orderkey"))
-      .agg(expr(
-        "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT)")
-        .as("li_cents"))
-    val o = T(s, dir, "orders").select(col("o_orderkey"),
-      expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-        .as("o_cents"))
-    graft.operators.Reconcile.blandAltman(
-      o.join(li, col("o_orderkey") === col("l_orderkey")),
-      "o_cents", "li_cents")
-  }
-
-  /** Cronbach's alpha ([[graft.operators.Drift.cronbachAlpha]]): do the
-    * five event types' daily volumes measure ONE underlying activity
-    * level — the internal-consistency gate before averaging them into a
-    * composite health score; items = types, observations = days
-    * (zero-filled spine), variance numerators pure integers to one
-    * pinned α.
-    */
-  private def q444(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "events")
-      .select(expr("(ts div 1000000000) div 86400").as("day"),
-        col("event_type"))
-    val counts = e.groupBy(col("day"), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-    val spine = e.select(col("day")).distinct()
-      .crossJoin(broadcast(e.select(col("event_type")).distinct()))
-    val full = spine.join(counts, Seq("day", "event_type"), "left")
-      .select(col("day"), col("event_type"),
-        coalesce(col("n"), lit(0L)).as("x"))
-    graft.operators.Drift.cronbachAlpha(full, "day", "event_type", "x")
-      .orderBy(col("i"))
-  }
-
-  /** MDE report ([[graft.operators.Drift.mdeReport]]): the minimum
-    * detectable effect of a 50/50 two-sample test per event type at
-    * current traffic — the pre-experiment power table every A/B
-    * platform publishes; pinned z literals (5% two-sided / 80% power),
-    * exact-moment variance, one pinned finish.
-    */
-  private def q445(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.mdeReport(
-      T(s, dir, "events").select(col("event_type"),
-        (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-          .as("cents")),
-      "event_type", "cents")
-      .orderBy(col("g"))
-
-  /** XmR control chart ([[graft.operators.Trend.xmrChart]]): natural
-    * process limits x̄ ± 2.66·M̄R per event type's hourly volume with
-    * special-cause violations — the SPC single-excursion flag beside
-    * q438's accumulating Page–Hinkley; exact integer sums, pinned
-    * limits, engine-exact point compares.
-    */
-  private def q446(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("event_type"),
-        expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Trend.xmrChart(hourly, "event_type", "hid", "cents")
-      .orderBy(col("event_type"))
-  }
-
-  /** Post-hoc pairwise Welch contrasts gated by BH-FDR (composition:
-    * [[graft.operators.Drift.pairwiseWelch]] × q420's
-    * [[graft.operators.Drift.bhFdr]]): after q408's ANOVA says the
-    * priority groups differ, WHICH pairs differ — all 10 contrasts from
-    * one moment pass, pinned-polynomial p-values, step-up gate at
-    * α = 0.05.
-    */
-  private def q442(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders").select(
-      expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-        .as("cents"),
-      col("o_orderpriority"))
-    val pw = graft.operators.Drift.pairwiseWelch(o, "cents",
-        "o_orderpriority")
-      .withColumn("pair", concat_ws("|", col("ga"), col("gb")))
-    val bh = graft.operators.Drift.bhFdr(
-      pw.select(col("pair"), col("p")), "pair", "p", 0.05)
-    pw.join(bh.select(col("k").as("pair"), col("p_rank"), col("bh_crit"),
-        col("rejected")), "pair")
-      .select(col("ga"), col("gb"), col("t_stat"), col("p"),
-        col("p_rank"), col("bh_crit"), col("rejected"))
-      .orderBy(col("p_rank"))
-  }
-
-  /** Mantel–Haenszel pooled odds ratio + CMH χ²
-    * ([[graft.operators.Drift.mantelHaenszel]]): is URGENT/HIGH priority
-    * associated with fulfilled status once the order YEAR is held fixed
-    * — the stratified 2×2 effect readout a flat table confounds when
-    * year mix and baseline both drift; per-stratum terms on the 1e-9
-    * grid, two pinned ratios.
-    */
-  private def q443(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.mantelHaenszel(
-      T(s, dir, "orders").select(
-        year(col("o_orderdate")).cast("long").as("yr"),
-        col("o_orderpriority"), col("o_orderstatus")),
-      "yr",
-      expr("substring(o_orderpriority, 1, 1) IN ('1','2')"),
-      col("o_orderstatus") === "F")
-      .orderBy(col("stratum"))
-
-  /** Streaming Mann–Kendall maintenance
-    * ([[graft.streaming.StreamVerify.mannKendallMaintenance]]): q421's
-    * trend screen kept current as an ingestion side effect — per-batch
-    * (type, day, cnt) daily-census partials land exactly-once; counts
-    * add, the drained test shares q421's oracle verbatim. Fourth
-    * self-maintaining surface; the quadratic pair census runs only at
-    * READ time over the day-domain store.
-    */
-  private def q440(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.mannKendallMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q440"))
-
-  /** Mood's median test ([[graft.operators.Drift.moodMedian]]): do the
-    * order-status groups share a price MEDIAN — the outlier-immune
-    * coarse location gate beside q373's rank-based Kruskal–Wallis;
-    * pooled lower median by exact census order statistic, 2×k χ² in
-    * cross-multiplied integers on the 1e-9 grid.
-    */
-  private def q441(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.moodMedian(
-      T(s, dir, "orders").select(
-        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-          .as("cents"),
-        col("o_orderstatus")),
-      "cents", "o_orderstatus")
-      .orderBy(col("g"))
-
-  /** Seasonal Mann–Kendall
-    * ([[graft.operators.Trend.seasonalMannKendall]]): cross-DAY monotone
-    * trend per event type WITHIN each hour-of-day season (Hirsch–Slack)
-    * — the diurnal cycle q421's plain MK would misread as trend; S and
-    * the variance numerators combine as exact integers across the 24
-    * seasons before the single /18.
-    */
-  private def q439(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("event_type"),
-        expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
-      .select(col("event_type"), pmod(col("hid"), lit(24L)).as("hod"),
-        expr("hid div 24").as("day"), col("cents"))
-    graft.operators.Trend.seasonalMannKendall(
-        hourly, "event_type", "hod", "day", "cents")
-      .orderBy(col("k"))
-  }
-
-  /** Distributed PAVA ([[graft.operators.Trend.isotonicPava]]) at 100×
-    * q406's bucket domain ($200 buckets instead of $20k): range-shuffled
-    * local pooling + one metadata-sized driver stack merge reaches the
-    * same unique isotonic optimum the minimax form defines — the oracle
-    * IS the minimax replay at this domain, proving plan-independence of
-    * the answer; per-x expansion by the q57 containment join.
-    */
-  private def q419(s: SparkSession, dir: String): DataFrame = {
-    val b = T(s, dir, "orders").select(
-        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) div 20000")
-          .as("bucket"),
-        when(col("o_orderstatus") === "F", 1L).otherwise(0L).as("conv"))
-      .groupBy(col("bucket"))
-      .agg(sum(col("conv")).as("ysum"), count(lit(1)).as("n"))
-    graft.operators.Trend.isotonicPava(b, "bucket", "ysum", "n")
-      .orderBy(col("x"))
-  }
-
-  private def q418(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "part").select(
-        graft.plans.PhoneticExpressions.phoneticKey(col("p_name")).as("key"),
-        col("p_name"))
-      .groupBy(col("key"))
-      .agg(count(lit(1)).as("n_parts"),
-        count_distinct(col("p_name")).as("n_names"))
-      .orderBy(col("key"))
-
-  /** HITS authorities ([[graft.operators.Graph.hits]]): 8 alternating
-    * power-iteration rounds over the customer→part purchase graph in
-    * EXACT integer arithmetic (normalization is monotone — the ranking
-    * is the fixed point's); top-10 authority parts with
-    * parts-per-million relative scores by integer division. The oracle
-    * unrolls the identical iteration (materialized CTEs, the q388
-    * lesson) with zero floating point anywhere.
-    */
-  private def q407(s: SparkSession, dir: String): DataFrame = {
-    val edges = T(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(T(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("hub"), col("l_partkey").as("auth"))
-    val (_, auth) = graft.operators.Graph.hits(edges, "hub", "auth",
-      rounds = 8)
-    // top-10 via TakeOrdered first: the primary sort key IS asc, so the
-    // global max(asc) survives into the head and both windows then run
-    // over 10 rows instead of the whole part domain single-partitioned
-    auth
-      .orderBy(col("asc").desc, col("a")).limit(10)
-      .withColumn("mx", max(col("asc")).over(Window.partitionBy()))
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("asc").desc, col("a"))))
-      .select(col("rank").cast("long").as("rank"), col("a").as("part"),
-        // exact floor: subtract the remainder first, then the division
-        // is exact — `div`/`//` on DECIMALs round differently per engine
-        expr("CAST((asc * 1000000 - pmod(asc * 1000000, mx)) / mx AS BIGINT)")
-          .as("score_ppm"))
-      .orderBy(col("rank"))
-  }
-
-  /** ONE-WAY ANOVA F ([[graft.operators.Drift.anovaF]]): the k-group
-    * parametric mean test over order priorities — completes the family
-    * beside q362's two-group Welch and q373's k-group rank test; exact
-    * moments, grid terms, pinned finish.
-    */
-  private def q408(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders").select(col("o_orderpriority"),
-      (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Drift.anovaF(o, "cents", "o_orderpriority")
-      .orderBy(col("g"))
-  }
-
-  /** McNEMAR paired test ([[graft.operators.Drift.mcnemar]]): did the
-    * SAME users flip purchase behavior between the pre and post halves
-    * — the within-subject change test; only discordant cells matter.
-    */
-  private def q409(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(col("user_id"),
-      col("ts").cast("long").as("t"), col("event_type"))
-    val mm = ev.agg(min(col("t")).as("tmin"), max(col("t")).as("tmax"))
-    // unit = (user, event type); outcome = "active" (≥ 10 events) in
-    // the half — heavy users make any existence predicate degenerate
-    val per = ev.crossJoin(broadcast(mm))
-      .withColumn("mid", expr("(tmin + tmax) div 2"))
-      .groupBy(col("user_id"), col("event_type"))
-      .agg((sum(when(col("t") <= col("mid"), 1L).otherwise(0L)) >= 10L)
-        .as("pre"),
-        (sum(when(col("t") > col("mid"), 1L).otherwise(0L)) >= 10L)
-          .as("post"))
-    graft.operators.Drift.mcnemar(per, col("pre"), col("post"))
-  }
-
-  /** BUTTERFLY census ([[graft.operators.Graph.butterflyCounts]]):
-    * exact bipartite 4-cycle counts over the part–order graph from the
-    * shared-connector pair census (C(s,2) per pair, never enumerating
-    * cycles) — the bipartite clustering analog of q162's triangles.
-    */
-  private def q405(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Graph.butterflyCounts(
-      T(s, dir, "lineitem").select(col("l_partkey"), col("l_orderkey")),
-      "l_partkey", "l_orderkey", topN = 10).orderBy(col("rank"))
-
-  /** ISOTONIC calibration ([[graft.operators.Trend.isotonicFit]]): the
-    * monotone order-status rate curve over price buckets by the exact
-    * minimax characterization (PAVA's unique answer without a merge
-    * schedule) — the score-to-probability calibration fit, bucket
-    * domain by contract.
-    */
-  private def q406(s: SparkSession, dir: String): DataFrame = {
-    val b = T(s, dir, "orders").select(
-        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) div 2000000")
-          .as("bucket"),
-        when(col("o_orderstatus") === "F", 1L).otherwise(0L).as("conv"))
-      .groupBy(col("bucket"))
-      .agg(sum(col("conv")).as("ysum"), count(lit(1)).as("n"))
-    graft.operators.Trend.isotonicFit(b, "bucket", "ysum", "n")
-      .orderBy(col("x"))
-  }
-
-  /** STREAMING MERKLE maintenance
-    * ([[graft.streaming.StreamVerify.merkleMaintenance]]): micro-batches
-    * land partial leaf censuses as exactly-once commits; XOR and count
-    * both merge, so the store equals the whole-corpus census no matter
-    * how ingestion was batched — q401's reconciliation surface
-    * maintained as a side effect of ingestion.
-    */
-  private def q402(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.merkleMaintenance(
-      s, q135Events(s, dir), scratch(dir, "q402"))
-
-  /** YUEN'S TRIMMED t-TEST ([[graft.operators.Drift.yuenTTest]]):
-    * purchase vs view values, 10% trim — the robust mean test beside
-    * q362's raw-mean Welch; trimmed means + winsorized variances
-    * computed exactly on the value domain.
-    */
-  private def q403(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .filter(col("event_type").isin("purchase", "view"))
-      .select((col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-        .as("cents"), col("event_type"))
-    graft.operators.Drift.yuenTTest(ev, "cents",
-      col("event_type") === "purchase", trimBp = 1000)
-  }
-
-  /** MASE-scored backtest ([[graft.operators.Trend.maseBacktest]]):
-    * q361's Holt rolling-origin MAE scaled by the lag-24 seasonal-naive
-    * MAE — the unit-free "beats repeating yesterday?" verdict per event
-    * type.
-    */
-  private def q404(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("event_type"),
-        expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Trend.maseBacktest(hourly, "event_type", "hid",
-      "cents", 0.5, 0.5, season = 24).orderBy(col("event_type"))
-  }
-
-  /** ε-DP MEDIAN ([[graft.operators.Privacy.dpMedian]]): the exponential
-    * mechanism over the order-price value domain with a Gumbel-max
-    * derandomized draw (salted md5 uniforms — retry-stable, oracle-
-    * replayable); the rank-sensitivity DP release the Laplace family
-    * (q268) can't give for order statistics.
-    */
-  private def q400(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Privacy.dpMedian(
-      T(s, dir, "orders").select(
-        (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long")
-          .as("cents")),
-      "cents", epsilon = 0.5, salt = "dpm")
-
-  /** MERKLE-TREE table diff ([[graft.operators.Reconcile.merkleDiff]]):
-    * orders vs a deterministically drifted copy (every 997th key's
-    * price bumped one cent) — the anti-entropy reconciliation that
-    * finds every differing leaf range at log descent cost; q348's XOR
-    * fingerprint generalized to a range tree.
-    */
-  private def q401(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "orders").select(col("o_orderkey"),
-      col("o_orderstatus"),
-      (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long")
-        .as("cents"))
-    val drifted = base.withColumn("cents",
-      when(pmod(col("o_orderkey"), lit(997L)) === 0L, col("cents") + 1L)
-        .otherwise(col("cents")))
-    graft.operators.Reconcile.merkleDiff(base, drifted,
-      Seq("o_orderkey", "o_orderstatus", "cents"), buckets = 1024,
-      fanout = 32).orderBy(col("leaf"))
-  }
-
-  /** SPLIT-CONFORMAL intervals
-    * ([[graft.operators.Features.conformalInterval]]): per event type, a
-    * 90% distribution-free prediction interval around the train-split
-    * mean — q̂ by discrete-rank lookup on the exact residual domain,
-    * measured calibration coverage beside the guarantee.
-    */
-  private def q397(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(col("event_type"), col("event_id"),
-      (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Features.conformalInterval(ev, "event_type", "cents",
-      "event_id", alphaBp = 1000, salt = "conf").orderBy(col("g"))
-  }
-
-  /** AMS F₂ sketch ([[graft.operators.Sketches.amsF2]]): the
-    * second-frequency-moment estimate (= q386's self-join size) from 64
-    * signed counters vs the exact Σc² — integer signs, exact sums,
-    * the sketch replayed hash for hash.
-    */
-  private def q398(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Sketches.amsF2(T(s, dir, "events"), "user_id",
-      k = 64, salt = "ams")
-
-  /** SLIDING-WINDOW HLL ([[graft.operators.Sketches.slidingHllCells]]):
-    * one (bucket, ρ, max-ts) cell store answers distinct-user counts
-    * for BOTH the full range and the recent half — per-window registers
-    * re-derived by a ts filter over ≤ 256·45 cells, estimated by
-    * [[graft.operators.Sketches.hllEstimate]], compared to exact.
-    */
-  private def q399(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(col("user_id"),
-      col("ts").cast("long").as("t"))
-    val mm = ev.agg(min(col("t")).as("tmin"), max(col("t")).as("tmax"))
-    val cells = graft.operators.Sketches.slidingHllCells(
-      ev.withColumn("g", lit("all")), "g", "user_id", "t")
-      .crossJoin(broadcast(mm))
-      .withColumn("mid", expr("(tmin + tmax) div 2"))
-    val winCells = cells
-      .select(col("j"), col("rho"), col("max_ts"), lit("w_all").as("g"),
-        col("tmin").as("cut"))
-      .unionByName(cells.select(col("j"), col("rho"), col("max_ts"),
-        lit("w_recent").as("g"), (col("mid") + 1L).as("cut")))
-    val regs = winCells.filter(col("max_ts") >= col("cut"))
-      .groupBy(col("g"), col("j")).agg(max(col("rho")).as("m"))
-    val est = graft.operators.Sketches.hllEstimate(regs)
-    val evm = ev.crossJoin(broadcast(mm))
-      .withColumn("mid", expr("(tmin + tmax) div 2"))
-    val exact = evm.filter(col("t") >= col("tmin"))
-      .agg(count_distinct(col("user_id")).as("n_exact"))
-      .withColumn("g", lit("w_all")).select("g", "n_exact")
-      .unionByName(evm.filter(col("t") >= col("mid") + 1L)
-        .agg(count_distinct(col("user_id")).as("n_exact"))
-        .withColumn("g", lit("w_recent")).select("g", "n_exact"))
-    est.join(exact, "g")
-      .withColumn("rel_error",
-        round((col("estimate") - col("n_exact").cast("double")) /
-          col("n_exact").cast("double"), 6))
-      .orderBy(col("g"))
-  }
-
-  /** CUPED variance reduction ([[graft.operators.Features.cuped]]):
-    * per-user post-period spend adjusted by pre-period spend (θ fitted
-    * pooled), reported per hash-assigned arm with the variance ratio —
-    * the "how much less traffic does the next test need" number; the
-    * experimentation stack beside q390's SRM gate and q283/q362's
-    * tests.
-    */
-  private def q395(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(col("user_id"),
-      col("ts").cast("long").as("t"),
-      (col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-        .as("cents"))
-    val mm = ev.agg(min(col("t")).as("tmin"), max(col("t")).as("tmax"))
-    val per = ev.crossJoin(broadcast(mm))
-      .withColumn("pre", col("t") <= expr("(tmin + tmax) div 2"))
-      .groupBy(col("user_id"))
-      .agg(sum(when(col("pre"), col("cents")).otherwise(0L)).as("x"),
-        sum(when(!col("pre"), col("cents")).otherwise(0L)).as("y"))
-      .withColumn("arm", when(pmod(conv(substring(md5(concat(
-        lit("cuped:"), col("user_id").cast("string")).cast("binary")),
-        1, 13), 16, 10).cast("long"), lit(2L)) === 0L,
-        lit("control")).otherwise(lit("treatment")))
-    graft.operators.Features.cuped(per, "arm", "x", "y").orderBy(col("arm"))
-  }
-
-  /** FELLEGI–SUNTER EM ([[graft.operators.Linkage.fellegiSunter]]):
-    * m/u agreement probabilities and log-likelihood weights learned
-    * UNSUPERVISED from sorted-neighborhood customer pairs (nation /
-    * segment / close-balance agreement) — the principled upgrade of
-    * q143's hand-thresholded fuzzy linkage; EM runs on the 2³-pattern
-    * census, oracle replays it as a 10-round unrolled CTE chain.
-    */
-  private def q396(s: SparkSession, dir: String): DataFrame = {
-    val c = T(s, dir, "customer").select(col("c_custkey"),
-      col("c_nationkey"), col("c_mktsegment"),
-      (col("c_acctbal").cast(DecimalType(18, 2)) * 100).cast("long")
-        .as("bal"))
-    val ranked = graft.operators.GlobalOrder.rowNumbers(c,
-      Seq(col("bal"), col("c_custkey")), idCol = "rnk")
-    val left = ranked.select(col("rnk"), col("c_nationkey").as("n1"),
-        col("c_mktsegment").as("s1"), col("bal").as("b1"))
-      .withColumn("d", explode(array(lit(1L), lit(2L), lit(3L))))
-      .withColumn("tgt", col("rnk") + col("d"))
-    val pairs = left.join(ranked.select(col("rnk").as("tgt"),
-        col("c_nationkey").as("n2"), col("c_mktsegment").as("s2"),
-        col("bal").as("b2")), Seq("tgt"))
-      .select((col("n1") === col("n2")).as("same_nation"),
-        (col("s1") === col("s2")).as("same_segment"),
-        (abs(col("b1") - col("b2")) < 5000L).as("close_balance"))
-    graft.operators.Linkage.fellegiSunter(pairs,
-      Seq("same_nation", "same_segment", "close_balance"), iters = 10)
-      .orderBy(col("field"))
-  }
-
-  /** SAX SYMBOLIZATION ([[graft.operators.Trend.saxSymbols]]): per-user
-    * hourly spend compressed to 4-hour PAA means then a 4-letter motif
-    * string via exact-rank global breakpoints — the symbolic form motif
-    * mining and whole-series indexing consume.
-    */
-  private def q392(s: SparkSession, dir: String): DataFrame = {
-    val hourly = T(s, dir, "events")
-      .groupBy(col("user_id"), expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Trend.saxSymbols(hourly, "user_id", "hid", "cents",
-      paaWindow = 4, alphabet = 4).orderBy(col("k"))
-  }
-
-  /** EXACT ENERGY DISTANCE ([[graft.operators.Drift.energyDistance]]):
-    * purchase vs view value distributions — the integral-type
-    * two-sample statistic beside q385's KS supremum, every pairwise
-    * term exact via value-domain prefix sums.
-    */
-  private def q393(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .filter(col("event_type").isin("purchase", "view"))
-      .select((col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-        .as("cents"), col("event_type"))
-    graft.operators.Drift.energyDistance(ev, "cents",
-      col("event_type") === "purchase")
-  }
-
-  /** MEDIAN + order-statistic CI ([[graft.operators.Relational.medianCI]]):
-    * per-priority order-price median with the distribution-free 95%
-    * interval — ranks resolved on the value domain, no per-row sort.
-    */
-  private def q394(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders").select(col("o_orderpriority"),
-      (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Relational.medianCI(o, "o_orderpriority", "cents")
-      .orderBy(col("g"))
-  }
-
-  /** FIRST-FIT-DECREASING compaction plan
-    * ([[graft.operators.Packing.ffdPlan]]): per-brand file lists
-    * (deterministic sizes from retail-price cents) packed into 128 MB
-    * bins — the PLANNING half of compaction upstream of q111/q127's
-    * rewrites; partitions parallelize, the per-partition fold is
-    * metadata-sized by contract.
-    */
-  private def q389(s: SparkSession, dir: String): DataFrame = {
-    val cap = 134217728L
-    val files = T(s, dir, "part").select(col("p_brand"),
-      col("p_partkey"),
-      (pmod((col("p_retailprice").cast(DecimalType(18, 2)) * 100)
-        .cast("long"), lit(cap)) + 1L).as("bytes"))
-    graft.operators.Packing.ffdPlan(files, "p_brand", "p_partkey",
-      "bytes", cap).orderBy(col("part"), col("id"))
-  }
-
-  /** SAMPLE-RATIO-MISMATCH check ([[graft.operators.Drift.srmCheck]]):
-    * distinct users assigned 2:1:1 by the salted portable hash, arm
-    * counts χ²-tested against the declared split (crit 9.21 = χ²₀.₀₁,
-    * df 2) — the gate every A/B readout runs first.
-    */
-  private def q390(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Drift.srmCheck(T(s, dir, "events"), "user_id",
-      Seq(("control", 2), ("t1", 1), ("t2", 1)), "exp42", 9.21034)
-      .orderBy(col("arm"))
-
-  /** EXACT TRIMMED MEAN ([[graft.operators.Relational.trimmedMean]]):
-    * 5%-each-side trimmed order price per priority class, tie groups
-    * straddling the trim boundary apportioned exactly on the value
-    * domain — the robust mean beside q204's clamping winsorize.
-    */
-  private def q391(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders").select(col("o_orderpriority"),
-      (col("o_totalprice").cast(DecimalType(18, 2)) * 100).cast("long")
-        .as("cents"))
-    graft.operators.Relational.trimmedMean(o, "o_orderpriority", "cents",
-      trimBp = 500).orderBy(col("g"))
-  }
-
-  /** EXACT two-sample Kolmogorov–Smirnov
-    * ([[graft.operators.Drift.ksExact]]): purchase vs view value
-    * distributions, D and its location computed in INTEGERS over the
-    * value domain (cross-multiplied cumulative counts) — the unbinned
-    * upgrade of q295's binned KS.
-    */
-  private def q385(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
-      .filter(col("event_type").isin("purchase", "view"))
-      .select((col("value").cast(DecimalType(18, 2)) * 100).cast("long")
-        .as("cents"), col("event_type"))
-    graft.operators.Drift.ksExact(ev, "cents",
-      col("event_type") === "purchase")
-  }
-
-  /** JOIN-FANOUT AUDIT ([[graft.operators.Profiling.joinFanout]]): the
-    * exact output cardinality of the l_partkey self-join (q372's cost
-    * model) from key-domain statistics alone — total pairs plus the
-    * top-20 contributing keys with their share, the pre-join skew
-    * diagnosis that picks between shuffle/broadcast/salting.
-    */
-  private def q386(s: SparkSession, dir: String): DataFrame = {
-    val li = T(s, dir, "lineitem")
-    graft.operators.Profiling.joinFanout(li, "l_partkey", li, "l_partkey",
-      topN = 20).orderBy(col("rank"))
-  }
-
-  /** EVENTUALLY-FOLLOWS graph
-    * ([[graft.operators.Affinity.eventuallyFollows]]): per ordered
-    * event-type pair, how many users saw a strictly before b (first
-    * occurrences) — the process-mining relation q222's adjacent-step
-    * Markov transitions can't see.
-    */
-  private def q387(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Affinity.eventuallyFollows(T(s, dir, "events"),
-      "user_id", "event_type", "ts").orderBy(col("a"), col("b"))
-
-  /** DAG CRITICAL PATH ([[graft.operators.Graph.longestPathDag]]):
-    * longest weighted root-to-node distance over the two-parent supplier
-    * DAG (k div 2 and k div 3 edges, md5-derived weights) by
-    * layer-synchronous relaxation; the oracle unrolls the same
-    * relaxation to a fixed 20-round CTE chain (the q224 fixpoint
-    * pattern).
-    */
-  private def q388(s: SparkSession, dir: String): DataFrame = {
-    val keys = T(s, dir, "supplier")
-      .select(col("s_suppkey").cast("long").as("k"))
-    def hmod(prefix: String) =
-      pmod(conv(substring(md5(concat(lit(prefix),
-        col("k").cast("string")).cast("binary")), 1, 13), 16, 10)
-        .cast("long"), lit(1000L))
-    val e2 = keys.filter(col("k") >= 2)
-      .select(expr("k div 2").as("src"), col("k").as("dst"),
-        hmod("e2:").as("w"))
-    val e3 = keys.filter(col("k") >= 3 &&
-        expr("k div 3") =!= expr("k div 2"))
-      .select(expr("k div 3").as("src"), col("k").as("dst"),
-        hmod("e3:").as("w"))
-    graft.operators.Graph.longestPathDag(e2.unionByName(e3), maxRounds = 40)
-      .select(col("id"), col("d").as("dist")).orderBy(col("id"))
-  }
-
-  /** SQL-surface RECURSIVE CTE (Spark 4's WITH RECURSIVE / UnionLoop):
-    * per-depth census of the implicit binary tree over supplier keys
-    * (parent = key div 2) — the engine's own iterative closures (q110,
-    * q270, q299) now have the declarative spelling; both engines run the
-    * SAME recursion text modulo the integer-division token.
-    */
-  private def q323(s: SparkSession, dir: String): DataFrame = {
-    // pin the recursion's base table: UnionLoop re-executes the anchor
-    // side every step, and a parquet scan per step is pure per-iteration
-    // overhead on a dimension-sized table (same rows either way)
-    T(s, dir, "supplier").localCheckpoint(true)
-      .createOrReplaceTempView("supplier_v323")
-    s.sql("""WITH RECURSIVE d AS (
-        SELECT CAST(1 AS BIGINT) AS node, CAST(0 AS BIGINT) AS depth
-        UNION ALL
-        SELECT s.s_suppkey, d.depth + 1
-        FROM supplier_v323 s JOIN d ON s.s_suppkey div 2 = d.node)
-      SELECT depth, COUNT(*) AS n, MIN(node) AS min_node, MAX(node) AS max_node
-      FROM d GROUP BY depth ORDER BY depth""")
-  }
-
-  /** Tokenizer-coverage audit ([[graft.operators.TextPipeline.oovRate]]):
-    * per-language OOV rate against the top-1000 frequency vocabulary —
-    * the fairness lens on q156's vocab (a shared vocabulary under-serves
-    * low-resource languages first). Broadcast vocab apply; exact integer
-    * token counts.
-    */
-  private def q262(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.oovRate(T(s, dir, "documents"), topN = 1000)
-      .orderBy(col("lang"))
-
-  /** Exact stratified train/val/test split
-    * ([[graft.operators.Sampling.largestRemainderSplit]]): 80/10/10 per
-    * language by the largest-remainder method — integer-exact quotas,
-    * md5-ring assignment, engine-reproducible row for row (randomSplit
-    * is neither exact nor layout-stable).
-    */
-  private def q264(s: SparkSession, dir: String): DataFrame =
-    Sampling.largestRemainderSplit(
-        T(s, dir, "documents"), "lang", "doc_id",
-        Seq("train" -> 80, "val" -> 10, "test" -> 10))
-      .orderBy(col("doc_id"))
-
-  /** Metadata-only retention ([[graft.sources.TxLake.dropWhereExpired]]):
-    * day-aligned ingests carry logged per-file day stats; a TTL cut at
-    * the first tertile boundary expires the oldest third via ONE log
-    * entry with zero data I/O — expiry cuts ALONG files, deleteWhere cuts
-    * through them. The read-back must equal the plain day-filtered
-    * aggregate.
-    */
-  private def q265(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLake
-    val lake = scratch(dir, "q265") + "/lake"
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val ev = T(s, dir, "events")
-      .select(col("event_id"), col("event_type"), col("value"),
-        expr("(ts div 1000000000) div 86400").as("day"))
-    val b = ev.agg(min(col("day")).as("lo"), max(col("day")).as("hi")).collect()(0)
-    val (lo, hi) = (b.getLong(0), b.getLong(1))
-    val (b1, b2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-    Seq(col("day") <= b1, col("day") > b1 && col("day") <= b2, col("day") > b2)
-      .foreach(c => TxLake.commit(s, lake, ev.filter(c), statsCols = Seq("day")))
-    TxLake.dropWhereExpired(lake, "day", cutoff = b1 + 1)
-    TxLake.readSnapshot(s, lake)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("total_value"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Heterogeneous-source federation: the same logical table served from
-    * three formats at once (parquet + CSV + Avro via
-    * [[graft.sources.AvroIo]]), unioned under one explicit schema and
-    * aggregated — the "read everything the lake has accumulated" path a
-    * long-lived pipeline grows into. Catalyst prunes and pushes into each
-    * source independently; the CSV leg round-trips doubles through text
-    * losslessly (Spark writes shortest-round-trip representations).
-    */
-  private def q266(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.AvroIo
-    val root = scratch(dir, "q266")
-    graft.sources.LocalFs.deleteRecursively(root)
-    val ev = T(s, dir, "events")
-      .select(col("event_id"), col("event_type"), col("value"))
-    ev.filter(col("event_id") % 3 === 0)
-      .write.mode("overwrite").parquet(s"$root/pq")
-    ev.filter(col("event_id") % 3 === 1)
-      .write.mode("overwrite").option("header", "true").csv(s"$root/csv")
-    AvroIo.write(ev.filter(col("event_id") % 3 === 2), s"$root/avro")
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    s.read.schema(schema).parquet(s"$root/pq")
-      .unionByName(s.read.schema(schema).option("header", "true").csv(s"$root/csv"))
-      .unionByName(AvroIo.read(s, s"$root/avro", schema))
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("total_value"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Streaming ingest + TTL expiry
-    * ([[graft.streaming.StreamVerify.ingestWithRetention]]): micro-batch
-    * commits with logged sec stats over the time-sliced q259 staging,
-    * then a metadata-only [[graft.sources.TxLake.dropWhereExpired]] at
-    * the first tertile boundary — the retained table equals the plain
-    * sec-filtered aggregate.
-    */
-  private def q267(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    val secE = expr("unix_micros(cast(ts as timestamp)) div 1000000")
-    val b = raw.agg(min(secE).as("lo"), max(secE).as("hi")).collect()(0)
-    val cutoff = b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 3 + 1
-    graft.streaming.StreamVerify.ingestWithRetention(
-        s, q259Events(s, dir), scratch(dir, "q267"), cutoff)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sumx(col("value")).as("total_value"))
-      .orderBy(col("event_type"))
-  }
-
-  /** ε-DP noisy counts ([[graft.operators.Privacy.dpNoisyCounts]]): the
-    * Laplace mechanism with hash-derived (counter-based-RNG style) noise,
-    * so stage retries and engine re-runs publish the SAME release — the
-    * determinism a distributed DP pipeline needs — and the oracle replays
-    * the draw hash-for-hash through the inverse CDF.
-    */
-  private def q268(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Privacy.dpNoisyCounts(
-        T(s, dir, "events"), "event_type", epsilon = 1.0, salt = "dp1")
-      .orderBy(col("event_type"))
-
-  /** Interval-overlap join ([[Relational.intervalOverlapJoin]]): per-user
-    * daily activity spans × incident windows (±900 s around sampled error
-    * events), joined on a shared hour-bucket grid instead of the
-    * broadcast-nested-loop a raw theta-join would plan — the overlap-join
-    * shape that survives 100 TB. Canonical-bucket filtering emits each
-    * overlapping pair exactly once, no distinct pass.
-    */
-  private def q269(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "events")
-    val spans = e.groupBy(col("user_id"),
-        expr("(ts div 1000000000) div 86400").as("day"))
-      .agg(min(expr("ts div 1000000000")).as("span_lo"),
-        max(expr("ts div 1000000000")).as("span_hi"))
-    val windows = e.filter(col("event_type") === "error" &&
-        col("event_id") % 197 === 0)
-      .select(col("event_id").as("win_id"),
-        (expr("ts div 1000000000") - 900).as("win_lo"),
-        (expr("ts div 1000000000") + 900).as("win_hi"))
-    Relational.intervalOverlapJoin(spans, windows,
-        "span_lo", "span_hi", "win_lo", "win_hi", bucketWidth = 3600L)
-      .groupBy(col("user_id"), col("day"), col("span_lo"), col("span_hi"))
-      .agg(count(lit(1)).as("n_windows"))
-      .orderBy(col("user_id"), col("day"))
-  }
-
-  /** Weighted single-source shortest paths
-    * ([[graft.operators.Graph.shortestPaths]]): 4-round distributed
-    * Bellman-Ford over the customer↔supplier bipartite graph (edge weight
-    * = min shipped quantity on any shared order), sourced at nation 0's
-    * customers. The oracle unrolls the identical four relaxation rounds —
-    * exact integer arithmetic end to end.
-    */
-  private def q270(s: SparkSession, dir: String): DataFrame = {
-    val pairs = T(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"), col("l_quantity"))
-      .join(T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      .agg(min(floor(col("l_quantity")).cast("long")).as("w"))
-    val edges = pairs.select(col("cust").as("src"), (-col("supp")).as("dst"),
-        col("w"))
-      .unionByName(pairs.select((-col("supp")).as("src"),
-        col("cust").as("dst"), col("w")))
-    val sources = T(s, dir, "customer").filter(col("c_nationkey") === 0)
-      .select(col("c_custkey").as("node"))
-    graft.operators.Graph.shortestPaths(edges, sources, rounds = 4)
-      .orderBy(col("node"))
-  }
-
-  /** Hashing-trick feature vectors ([[graft.operators.Features
-    * .hashedFeatures]]): three categorical fields per customer folded into
-    * a fixed 16-dim signed-hash space — the stateless featurizer whose
-    * cost is O(batch) with zero vocabulary coordination. Sparse (key, idx,
-    * val) output; md5-replayable arithmetic.
-    */
-  private def q271(s: SparkSession, dir: String): DataFrame = {
-    val c = T(s, dir, "customer")
-    graft.operators.Features.hashedFeatures(c, "c_custkey", Seq(
-        concat(lit("seg:"), col("c_mktsegment")),
-        concat(lit("nat:"), col("c_nationkey").cast("string")),
-        concat(lit("bal:"),
-          floor(col("c_acctbal") / 1000).cast("long").cast("string"))),
-      dim = 16)
-      .orderBy(col("c_custkey"), col("idx"))
-  }
-
-  /** Decile lift/gains table — the model-evaluation staple: customers
-    * ranked by account balance into GLOBAL deciles
-    * ([[graft.operators.GlobalOrder.ntiles]] — range-shuffle, no
-    * single-partition window), response = has-any-order, then per-decile
-    * response rate and cumulative lift. Exact integer counts; the
-    * 10-row cumulative window runs over the aggregate, not the data.
-    */
-  private def q272(s: SparkSession, dir: String): DataFrame = {
-    val buyers = T(s, dir, "orders").select(col("o_custkey")).distinct()
-    val base = T(s, dir, "customer")
-      .join(buyers, col("c_custkey") === col("o_custkey"), "left")
-      .select(col("c_custkey"), col("c_acctbal"),
-        col("o_custkey").isNotNull.cast("long").as("pos"))
-    val dec = graft.operators.GlobalOrder.ntiles(base,
-      Seq(col("c_acctbal").desc, col("c_custkey").asc), 10, "decile")
-    val per = dec.groupBy(col("decile"))
-      .agg(count(lit(1)).as("n"), sum(col("pos")).as("n_pos"))
-    val wc = Window.orderBy(col("decile"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wa = Window.orderBy(col("decile"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    per
-      .withColumn("cum_n", sum(col("n")).over(wc))
-      .withColumn("cum_pos", sum(col("n_pos")).over(wc))
-      .withColumn("tot_n", sum(col("n")).over(wa))
-      .withColumn("tot_pos", sum(col("n_pos")).over(wa))
-      .select(col("decile"), col("n"), col("n_pos"),
-        round(col("n_pos").cast("double") / col("n").cast("double"), 6)
-          .as("pos_rate"),
-        round((col("cum_pos").cast("double") / col("cum_n").cast("double")) /
-          (col("tot_pos").cast("double") / col("tot_n").cast("double")), 6)
-          .as("cum_lift"))
-      .orderBy(col("decile"))
-  }
-
-  /** Topological layering / critical-path depth over the divisor DAG
-    * (k → 2k, k → 3k within the part-key domain): longest path INTO each
-    * node, computed as negated min-plus through
-    * [[graft.operators.Graph.shortestPaths]] (max-plus = min-plus on
-    * negated weights, every source at distance 0) — the dependency-level
-    * assignment a DAG scheduler derives before wave-wise execution. The
-    * oracle walks the same DAG with a recursive CTE and takes MAX(len).
-    */
-  private def q273(s: SparkSession, dir: String): DataFrame = {
-    // key 0 would be a 0→0 self-loop (0·m = 0) — a cycle, not a DAG;
-    // exclude it so the max-plus fixpoint exists
-    val nodes = T(s, dir, "part").filter(col("p_partkey") >= 1)
-      .select(col("p_partkey").as("k"))
-    def scaled(m: Int) = nodes.as("a")
-      .join(nodes.as("b"), col("b.k") === col("a.k") * m)
-      .select(col("a.k").as("src"), col("b.k").as("dst"))
-    val edges = scaled(2).unionByName(scaled(3)).withColumn("w", lit(-1L))
-    graft.operators.Graph
-      .shortestPaths(edges, nodes.select(col("k").as("node")), rounds = 20)
-      .select(col("node"), negate(col("dist")).as("layer"))
-      .orderBy(col("node"))
-  }
-
-  /** JSON schema-inference report ([[graft.operators.Profiling
-    * .jsonSchemaProfile]]) over two shapes: the real `events.props`
-    * column and a heterogeneous per-order JSON (long/double/string/bool
-    * plus EXPLICIT nulls on every fifth key, `ignoreNullFields=false`).
-    * The oracle does NOT replay the profiler — it derives each
-    * (path, type, count) row independently from the relational columns,
-    * so the whole keys→extract→classify pipeline is checked against an
-    * external expectation.
-    */
-  private def q274(s: SparkSession, dir: String): DataFrame = {
-    import graft.operators.Profiling
-    val ev = T(s, dir, "events").select(col("props").as("j"))
-    val oj = T(s, dir, "orders").select(to_json(struct(
-        col("o_orderkey").as("key"),
-        col("o_totalprice").as("price"),
-        col("o_orderstatus").as("status"),
-        when(col("o_orderkey") % 5 === 0, lit(null).cast("string"))
-          .otherwise(col("o_orderpriority")).as("prio"),
-        (col("o_orderkey") % 7 === 0).as("flag")),
-      Map("ignoreNullFields" -> "false")).as("j"))
-    Profiling.jsonSchemaProfile(ev, "j").withColumn("src", lit("events"))
-      .unionByName(
-        Profiling.jsonSchemaProfile(oj, "j").withColumn("src", lit("orders")))
-      .select(col("src"), col("path"), col("vtype"), col("n"), col("coverage"))
-      .orderBy(col("src"), col("path"), col("vtype"))
-  }
-
-  /** Per-document lexical diversity ([[graft.operators.TextPipeline
-    * .lexicalDiversity]]): type/token and hapax-legomena ratios — the
-    * corpus-quality gate that catches template spam (low TTR) and
-    * generated filler (degenerate hapax profile). Two map-side-combined
-    * aggregation levels, exact integer counts.
-    */
-  private def q275(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline
-      .lexicalDiversity(T(s, dir, "documents"), "doc_id", "text")
-      .orderBy(col("doc_id"))
-
-  /** Out-of-order ingestion audit: lateness of each event = running max of
-    * event-time over ARRIVAL order, minus its own event-time — the batch
-    * measurement that tells a streaming deployment what watermark delay it
-    * actually needs. The synthetic table is stored fully time-ordered, so
-    * arrival order is the engine's deterministic md5-of-id ingest
-    * sequence (a portable stand-in for a real ingest's arrival id; with
-    * one, ORDER BY that instead). Per-user windows (one key shuffle, no
-    * global sort), bucketed into a 4-bin histogram per type.
-    */
-  private def q276(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "events").select(col("user_id"), col("event_type"),
-      col("event_id"), expr("ts div 1000000000").as("sec"),
-      md5(col("event_id").cast("string")).as("arr"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("arr"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    e.withColumn("lateness", max(col("sec")).over(w) - col("sec"))
-      .withColumn("bucket",
-        when(col("lateness") === 0, "a_on_time")
-          .when(col("lateness") < 60, "b_lt_1m")
-          .when(col("lateness") < 3600, "c_lt_1h")
-          .otherwise("d_ge_1h"))
-      .groupBy(col("event_type"), col("bucket"))
-      .agg(count(lit(1)).as("n"), max(col("lateness")).as("max_lateness"))
-      .orderBy(col("event_type"), col("bucket"))
-  }
-
-  /** Zipf-law fit ([[graft.operators.TextPipeline.zipfFit]]) over the
-    * top-500 corpus frequency spectrum: OLS slope/intercept in log-log
-    * space with decimal-summed terms (order-independent exactness, the
-    * q256 discipline). Slope ≈ -1 is healthy natural text; flat slopes
-    * flag templated corpora before they poison a training mix.
-    */
-  private def q277(s: SparkSession, dir: String): DataFrame =
-    graft.operators.TextPipeline.zipfFit(T(s, dir, "documents"), "text", 500)
-
-  /** Zero-copy SHALLOW CLONE ([[graft.sources.TxLake.cloneTable]]): the
-    * clone references the source's files by path in ONE metadata write,
-    * then both tables evolve independently — an append and a DELETE land
-    * only in the clone; a later source commit is invisible to the clone.
-    * The dev/staging-sandbox idiom over a 100 TB production table.
-    */
-  private def q278(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLake
-    val root = scratch(dir, "q278")
-    graft.sources.LocalFs.deleteRecursively(root)
-    val src = root + "/src"; val cl = root + "/clone"
-    val o = T(s, dir, "orders").select(col("o_orderkey"), col("o_orderstatus"),
-      col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
-    TxLake.commit(s, src, o.filter(col("o_orderkey") % 3 === 0))
-    TxLake.cloneTable(src, cl)
-    TxLake.commit(s, cl, o.filter(col("o_orderkey") % 3 === 1))
-    TxLake.deleteWhere(s, cl, col("o_orderstatus") === "F")
-    TxLake.commit(s, src, o.filter(col("o_orderkey") % 3 === 2))
-    def side(p: String, tag: String) = TxLake.readSnapshot(s, p)
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("total"))
-      .withColumn("side", lit(tag))
-    side(src, "src").unionByName(side(cl, "clone"))
-      .select(col("side"), col("o_orderstatus"), col("n"), col("total"))
-      .orderBy(col("side"), col("o_orderstatus"))
-  }
-
-  /** Per-user event-type trigram mining (two `lead`s over the per-user
-    * event-time order, then one combine): the sequential-pattern
-    * counterpart of q222's Markov bigrams — the support table a
-    * next-action model or funnel miner starts from. One key shuffle,
-    * exact counts.
-    */
-  private def q279(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "events").select(col("user_id"), col("event_type"),
-      expr("ts div 1000000000").as("sec"), col("event_id"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("sec"), col("event_id"))
-    e.withColumn("t2", lead(col("event_type"), 1).over(w))
-      .withColumn("t3", lead(col("event_type"), 2).over(w))
-      .filter(col("t3").isNotNull)
-      .select(col("event_type").as("t1"), col("t2"), col("t3"))
-      .groupBy(col("t1"), col("t2"), col("t3"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("t1"), col("t2"), col("t3"))
-  }
-
-  /** Predicate-scoped atomic overwrite ([[graft.sources.TxLake
-    * .replaceWhere]]): recompute the middle day's events (values doubled)
-    * and replace EXACTLY that day in one commit — the day-partition
-    * backfill idiom, with the out-of-scope guard that keeps a stray row
-    * from corrupting a neighboring day. Read-back equals the day-patched
-    * aggregate.
-    */
-  private def q280(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLake
-    val lake = scratch(dir, "q280") + "/lake"
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val e = T(s, dir, "events").select(col("event_id"), col("event_type"),
-      col("value").cast(DecimalType(18, 2)).as("v"),
-      expr("(ts div 1000000000) div 86400").as("day"))
-    TxLake.commit(s, lake, e)
-    val b = e.agg(min(col("day")), max(col("day"))).collect()(0)
-    val d = b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 2
-    val corrected = e.filter(col("day") === d)
-      .withColumn("v", (col("v") * 2).cast(DecimalType(18, 2)))
-    TxLake.replaceWhere(s, lake, col("day") === d, corrected)
-    TxLake.readSnapshot(s, lake)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("v")).cast("double").as("total"))
-      .orderBy(col("event_type"))
-  }
-
-  /** Markov removal-effect attribution
-    * ([[graft.operators.Attribution.markovRemoval]]): user journeys
-    * truncated at first purchase feed a first-order transition matrix
-    * (distributed counting: one window pass, one combine); the
-    * bounded-step absorption recursion runs in pure int64 p9 arithmetic
-    * on the O(channels²) collected matrix. Each channel's credit is the
-    * start→conv probability drop when paths through it are deleted.
-    */
-  private def q281(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "events").select(col("user_id"), col("event_type"),
-      expr("ts div 1000000000").as("sec"), col("event_id"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("sec"), col("event_id"))
-    val o = e.withColumn("rn", row_number().over(w))
-    val fp = o.filter(col("event_type") === "purchase")
-      .groupBy(col("user_id")).agg(min(col("rn")).as("prn"))
-    val p = o.join(fp, Seq("user_id"), "left")
-      .filter(col("prn").isNull || col("rn") <= col("prn"))
-      .select(col("user_id"), col("event_type"), col("rn"))
-    val w2 = Window.partitionBy(col("user_id")).orderBy(col("rn"))
-    val steps = p.withColumn("nxt", lead(col("event_type"), 1).over(w2))
-      .select(col("event_type").as("src"),
-        when(col("nxt").isNotNull, col("nxt"))
-          .when(col("event_type") =!= "purchase", lit("drop"))
-          .otherwise(lit(null)).as("dst"))
-      .filter(col("dst").isNotNull)
-    val starts = p.filter(col("rn") === 1)
-      .select(lit("start").as("src"), col("event_type").as("dst"))
-    val tr = starts.unionByName(steps)
-      .withColumn("dst",
-        when(col("dst") === "purchase", "conv").otherwise(col("dst")))
-      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("n"))
-    graft.operators.Attribution.markovRemoval(tr,
-        Seq("click", "signup", "view", "error"), steps = 8)
-      .orderBy(col("channel"))
-  }
-
-  /** Batch debounce/throttle: per (user, type), keep an event only if
-    * ≥ 600 s passed since the last KEPT one — the greedy fold telemetry
-    * pipelines use against alert storms and duplicate beacons. One
-    * combine into a sorted per-key array, then a codegen'd
-    * higher-order-function fold; per-key volume bounds the array (shard
-    * hot keys by day first at extreme scale).
-    */
-  private def q282(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
-      .select(col("user_id"), col("event_type"), expr("ts div 1000000000").as("sec"))
-      .groupBy(col("user_id"), col("event_type"))
-      .agg(sort_array(collect_list(col("sec"))).as("ss"))
-      .select(col("user_id"), col("event_type"), explode(expr(
-        """aggregate(ss,
-             named_struct('lk', cast(-1000000 as bigint),
-                          'kept', cast(array() as array<bigint>)),
-             (acc, x) -> IF(x >= acc.lk + 600,
-               named_struct('lk', x, 'kept', concat(acc.kept, array(x))),
-               acc),
-             acc -> acc.kept)""")).as("kept_sec"))
-      .orderBy(col("user_id"), col("event_type"), col("kept_sec"))
-
-  /** A/B experiment readout: deterministic md5 bucket assignment (the
-    * production trait — re-running assignment can never reshuffle units),
-    * outcome = the unit is an error event, and the pooled two-proportion
-    * z-score from exact integer counts. One map-side-combined pass,
-    * closed-form z replayed op-for-op. (The synthetic table has only ~15
-    * users per mille, all converting, so the randomization unit here is
-    * the event; the operator is unit-agnostic.)
-    */
-  private def q283(s: SparkSession, dir: String): DataFrame = {
-    val units = T(s, dir, "events")
-      .select((col("event_type") === "error").cast("long").as("conv"),
-        pmod(conv(substring(md5(concat(lit("ab1:"),
-          col("event_id").cast("string"))), 1, 13), 16, 10).cast("long"), lit(2))
-          .as("arm"))
-    val agg = units.agg(
-      sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n_a"),
-      sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n_b"),
-      sum(when(col("arm") === 0, col("conv")).otherwise(0L)).as("conv_a"),
-      sum(when(col("arm") === 1, col("conv")).otherwise(0L)).as("conv_b"))
-    val na = col("n_a").cast("double"); val nb = col("n_b").cast("double")
-    val pa = col("conv_a").cast("double") / na
-    val pb = col("conv_b").cast("double") / nb
-    val pp = (col("conv_a") + col("conv_b")).cast("double") /
-      (col("n_a") + col("n_b")).cast("double")
-    agg.select(col("n_a"), col("n_b"), col("conv_a"), col("conv_b"),
-      round(pa, 6).as("rate_a"), round(pb, 6).as("rate_b"),
-      round((pa - pb) /
-        sqrt(pp * (lit(1.0) - pp) * (lit(1.0) / na + lit(1.0) / nb)), 6)
-        .as("z"))
-  }
-
-  /** Streaming debounce ([[graft.streaming.EventsStream.debounce]] via
-    * [[graft.streaming.StreamVerify.debounceStream]]): one long of state
-    * per key, update-mode final emissions, REAL cross-batch suppression
-    * over the time-sliced staging — must equal the batch greedy fold
-    * (q282's shape at a 900 s gap) row for row.
-    */
-  private def q284(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify
-      .debounceStream(s, q259Events(s, dir), gapSec = 900)
-      .orderBy(col("user_id"), col("event_type"), col("kept_sec"))
-
-  /** Local clustering coefficient
-    * ([[graft.operators.Graph.clusteringCoefficient]]) over the top-60
-    * word co-occurrence graph (edges = word pairs sharing ≥ 3 documents):
-    * triangle counting via the arboricity-bounded degree-ordered
-    * orientation, degrees in one combine — the community-density lens on
-    * the q123/q59 co-occurrence stack.
-    */
-  private def q285(s: SparkSession, dir: String): DataFrame = {
-    val wds = T(s, dir, "documents").select(col("doc_id"),
-        explode(split(regexp_replace(lower(trim(col("text"))), "\\s+", " "),
-          " ")).as("w"))
-      .distinct()
-    val top = wds.groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .withColumn("rn",
-        row_number().over(Window.orderBy(col("c").desc, col("w").asc)))
-      .filter(col("rn") <= 60).select(col("w"))
-    val dw = wds.join(broadcast(top), Seq("w")).select(col("doc_id"), col("w"))
-    val edges = dw.as("a").join(dw.as("b"),
-        col("a.doc_id") === col("b.doc_id") && col("a.w") < col("b.w"))
-      .groupBy(col("a.w").as("src"), col("b.w").as("dst"))
-      .agg(count(lit(1)).as("ndocs"))
-      .filter(col("ndocs") >= 3)
-      .select(col("src"), col("dst"))
-    graft.operators.Graph.clusteringCoefficient(edges)
-      .orderBy(col("node"))
-  }
-
-  /** Forward fill with a GAP LIMIT: interior missing hours inherit the
-    * last observed per-user hourly value only while the gap is ≤ 3 hours;
-    * longer outages stay `gap` (filling across a real outage fabricates
-    * data — the limit is what production imputation uses). Same
-    * spine + one-window shape as q191's interpolation.
-    */
-  private def q286(s: SparkSession, dir: String): DataFrame = {
-    // interval-explode formulation (the q65 rewrite): within an interval
-    // the previous observation IS the interval head, so status and fill
-    // derive from the head directly — no bounds aggregate, no spine⋈census
-    // join, windows over the census instead of the dense spine
-    val hourly = T(s, dir, "events")
-      .groupBy(col("user_id"), expr("(ts div 1000000000) div 3600").as("hid"))
-      .agg((sum(col("value").cast(DecimalType(18, 2))).cast("double") /
-        count(lit(1))).as("hv"))
-    val wLead = Window.partitionBy(col("user_id")).orderBy(col("hid"))
-    hourly
-      .withColumn("__next", lead(col("hid"), 1).over(wLead))
-      .select(col("user_id"), col("hv"), col("hid").as("__h"),
-        explode(sequence(col("hid"),
-          coalesce(col("__next") - 1L, col("hid")))).as("hid"))
-      .select(col("user_id"), col("hid"),
-        when(col("hid") === col("__h"), "observed")
-          .when(col("hid") - col("__h") <= 3, "filled")
-          .otherwise("gap").as("status"),
-        when(col("hid") === col("__h"), col("hv"))
-          .when(col("hid") - col("__h") <= 3, col("hv")).as("v"))
-      .orderBy(col("user_id"), col("hid"))
-  }
-
-  /** Funnel latency percentiles: first signup → first subsequent purchase
-    * per user, exact interpolated p50/p90 per market segment (the q82
-    * replayable-interpolation pattern — no approximate percentile in the
-    * readout path). One window per segment over per-user latencies.
-    */
-  private def q287(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "events").select(col("user_id"), col("event_type"),
-      expr("ts div 1000000000").as("sec"))
-    val sign = e.filter(col("event_type") === "signup")
-      .groupBy(col("user_id")).agg(min(col("sec")).as("s0"))
-    val buy = e.filter(col("event_type") === "purchase")
-      .join(sign, Seq("user_id"))
-      .filter(col("sec") >= col("s0"))
-      .groupBy(col("user_id"), col("s0")).agg(min(col("sec")).as("p0"))
-    val lat = buy
-      .join(T(s, dir, "customer"), col("user_id") === col("c_custkey"))
-      .select(col("c_mktsegment").as("seg"), col("user_id"),
-        (col("p0") - col("s0")).cast("double").as("lat"))
-    val w = Window.partitionBy(col("seg")).orderBy(col("lat"), col("user_id"))
-    val cw = Window.partitionBy(col("seg"))
-    val ranked = lat.withColumn("rn", row_number().over(w))
-      .withColumn("n", count(lit(1)).over(cw))
-    def interp(p: Double): Column = {
-      val pos = lit(1.0) + lit(p) * (col("n").cast("double") - 1.0)
-      val lo = floor(pos).cast("long")
-      val hi = ceil(pos).cast("long")
-      val vLo = max(when(col("rn") === lo, col("lat")))
-      val vHi = max(when(col("rn") === hi, col("lat")))
-      vLo + max(pos - floor(pos)) * (vHi - vLo)
-    }
-    ranked.groupBy(col("seg"))
-      .agg(interp(0.5).as("p50"), interp(0.9).as("p90"), max(col("n")).as("n"))
-      .orderBy(col("seg"))
-  }
-
-  /** Model-calibration reliability table + ECE: normalized account balance
-    * as the score, has-any-order as the outcome, ten equal-width bins.
-    * Per-bin mean score accumulates in DECIMAL (order-independent); the
-    * expected-calibration-error terms are rounded-then-decimal-summed so
-    * the single ECE number is reproducible bit-for-bit at any
-    * parallelism.
-    */
-  private def q288(s: SparkSession, dir: String): DataFrame = {
-    val buyers = T(s, dir, "orders").select(col("o_custkey")).distinct()
-    val c = T(s, dir, "customer")
-      .join(buyers, col("c_custkey") === col("o_custkey"), "left")
-      .select(col("c_custkey"), col("c_acctbal"),
-        col("o_custkey").isNotNull.cast("long").as("pos"))
-    val mm = c.agg(min(col("c_acctbal")).as("blo"), max(col("c_acctbal")).as("bhi"))
-    val scored = c.crossJoin(broadcast(mm))
-      .withColumn("score", round((col("c_acctbal") - col("blo")) /
-        (col("bhi") - col("blo")), 6).cast(DecimalType(12, 6)))
-      .withColumn("bin",
-        least(floor(col("score") * 10).cast("long"), lit(9L)))
-    val bins = scored.groupBy(col("bin"))
-      .agg(count(lit(1)).as("n"), sum(col("pos")).as("n_pos"),
-        sum(col("score")).as("score_sum"))
-    val tot = Window.orderBy(col("bin"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    bins
-      .withColumn("tot_n", sum(col("n")).over(tot))
-      .withColumn("mean_score",
-        col("score_sum").cast("double") / col("n").cast("double"))
-      .withColumn("rate",
-        col("n_pos").cast("double") / col("n").cast("double"))
-      .withColumn("term",
-        round((col("n").cast("double") / col("tot_n").cast("double")) *
-          abs(col("rate") - col("mean_score")), 9).cast(DecimalType(18, 9)))
-      .withColumn("ece", sum(col("term")).over(tot).cast("double"))
-      .select(col("bin"), col("n"), col("n_pos"),
-        round(col("mean_score"), 6).as("mean_score"),
-        round(col("rate"), 6).as("rate"), col("ece"))
-      .orderBy(col("bin"))
-  }
-
-  /** Incremental secondary-index maintenance
-    * ([[graft.sources.TxLake.refreshBloomIndex]]): build the bloom index
-    * once, run a MERGE that rewrites some files and adds others, then
-    * refresh the index at O(delta files) data cost — carried files keep
-    * their blooms from the index itself, removed files' rows are dropped
-    * (a stale candidate must never resurrect rewritten rows). Point
-    * lookups through the refreshed index must see exactly the post-merge
-    * truth.
-    */
-  private def q289(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    import graft.sources.TxLake
-    val root = scratch(dir, "q289")
-    graft.sources.LocalFs.deleteRecursively(root)
-    val lake = root + "/lake"; val idx = root + "/idx"
-    val o = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
-      col("o_orderstatus"),
-      col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
-    (0 until 3).foreach(t =>
-      TxLake.commit(s, lake, o.filter(col("o_orderkey") % 3 === t)))
-    TxLake.buildBloomIndex(s, lake, "o_orderkey", idx)
-    // %150 keys are ≡ 0 (mod 3): the merge touches only commit-0's files,
-    // so commits 1 and 2 must carry their blooms through the refresh.
-    // Synthetic insert keys derive from max(o_orderkey) — a fixed literal
-    // would collide again at a large enough scale factor (r6 lesson).
-    val base = (o.agg(max(col("o_orderkey"))).head().getLong(0) /
-      1000000L + 1L) * 1000000L
-    val updates = o.filter(col("o_orderkey") % 150 === 0)
-      .withColumn("price", (col("price") * 2).cast(DecimalType(18, 2)))
-      .unionByName(s.range(base + 1L, base + 6L).select(col("id").as("o_orderkey"),
-        lit(0L).as("o_custkey"), lit("N").as("o_orderstatus"),
-        lit("1.00").cast(DecimalType(18, 2)).as("price")))
-    TxLake.mergeByKey(s, lake, updates, "o_orderkey")
-    val (nNew, _, nKept) = TxLake.refreshBloomIndex(s, lake, "o_orderkey", idx)
-    require(nNew > 0, "merge must have produced unindexed files")
-    require(nKept > 0, "untouched files must carry their blooms over")
-    TxLake.readByKeysBloom(s, lake, idx,
-        Seq(150L, 300L, 301L, base + 3L).toDF("k"))
-      .filter(col("o_orderkey").isin(150L, 300L, 301L, base + 3L))
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-        col("price").cast("double").as("price"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** Three-replica golden-source election
-    * ([[graft.operators.Reconcile.majorityVote]]): field-level majority
-    * across replicas with injected divergences (a price drift, a status
-    * corruption, a missing-key outage) — the quorum DECIDES where q130's
-    * two-way diff could only flag. The oracle derives the expected
-    * report independently from the divergence rules, not by replay.
-    */
-  private def q290(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders").select(col("o_orderkey"), col("o_orderstatus"),
-      col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
-    val r2 = o.withColumn("price",
-      when(col("o_orderkey") % 31 === 0,
-        (col("price") + 1).cast(DecimalType(18, 2))).otherwise(col("price")))
-    val r3 = o.filter(col("o_orderkey") % 41 =!= 0)
-      .withColumn("o_orderstatus",
-        when(col("o_orderkey") % 37 === 0, lit("X"))
-          .otherwise(col("o_orderstatus")))
-    graft.operators.Reconcile.majorityVote(o, r2, r3, "o_orderkey",
-        Seq("o_orderstatus", "price"))
-      .filter(col("n_conflict_fields") > 0 || col("n_present") < 3)
-      .select(col("o_orderkey"), col("n_present"), col("o_orderstatus"),
-        col("price").cast("double").as("price"),
-        col("n_conflict_fields"), col("n_unresolved"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** Benford first-digit audit ([[graft.operators.Profiling
-    * .benfordDigits]]) over order totals — the fabricated-data forensic:
-    * observed leading-digit shares vs the pinned Benford constants, χ²
-    * totaled in decimal. Leading digit from the integer part only, so no
-    * cent-rounding boundary can flip a digit between engines.
-    */
-  private def q291(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Profiling
-      .benfordDigits(T(s, dir, "orders"), "o_totalprice")
-      .orderBy(col("digit"))
-
-  /** Functional-dependency discovery ([[graft.operators.Profiling
-    * .fdViolations]]) over four declared candidate pairs on customer —
-    * which "natural keys" actually determine which attributes (key→attr
-    * holds; nation→segment and its inverse are violated). One melted
-    * shuffle for all pairs.
-    */
-  private def q292(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Profiling.fdViolations(T(s, dir, "customer"), Seq(
-        "c_custkey" -> "c_mktsegment", "c_nationkey" -> "c_mktsegment",
-        "c_mktsegment" -> "c_nationkey", "c_name" -> "c_custkey"))
-      .orderBy(col("lhs"), col("rhs"))
-
-  /** Per-type rolling 7-day OLS slope ([[graft.operators.Trend
-    * .rollingOlsPerKey]]) over daily event counts — the local-trend
-    * series a monitoring dashboard plots (q147 fits one global line;
-    * this emits the trend at every point). Exact integer window sums,
-    * closed-form slope in pinned double order.
-    */
-  private def q293(s: SparkSession, dir: String): DataFrame = {
-    val daily = T(s, dir, "events")
-      .groupBy(col("event_type"),
-        expr("(ts div 1000000000) div 86400").as("day"))
-      .agg(count(lit(1)).as("n_events"))
-    graft.operators.Trend.rollingOlsPerKey(daily, "event_type", "day",
-        "n_events", win = 7)
-      .orderBy(col("event_type"), col("x"))
-  }
-
-  /** Market-basket association rules ([[graft.operators.Affinity
-    * .assocRules]]): baskets = orders, items = part brands; support,
-    * confidence and lift for every co-bought brand pair in both
-    * orientations. Pair generation is basket-keyed (never cross-basket);
-    * everything after the pair aggregate is brand-domain-sized.
-    */
-  private def q294(s: SparkSession, dir: String): DataFrame = {
-    val baskets = T(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey"))
-      .join(T(s, dir, "part").select(col("p_partkey"), col("p_brand")),
-        col("l_partkey") === col("p_partkey"))
-      .select(col("l_orderkey").as("basket"), col("p_brand").as("item"))
-    graft.operators.Affinity.assocRules(baskets, "basket", "item")
-      .orderBy(col("ante"), col("cons"))
-  }
-
-  /** Two-sample KS distance ([[graft.operators.Drift.ksBinned]]) between
-    * urgent and low-priority order totals on a 40-bin grid — the
-    * threshold-free distribution-shift test that never needs a global
-    * sort: one map-side-combined bin pass, ECDFs maximized over the
-    * bins-sized aggregate.
-    */
-  private def q295(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders")
-      .filter(col("o_orderpriority").isin("1-URGENT", "5-LOW"))
-    graft.operators.Drift.ksBinned(o, "o_totalprice",
-        col("o_orderpriority") === "1-URGENT", bins = 40)
-      .orderBy(col("bin"))
-  }
-
-  /** Item-item top-3 neighbors ([[graft.operators.Affinity
-    * .itemNeighbors]]) by co-occurrence cosine over brand baskets — the
-    * precomputed neighborhood an item-based recommender serves from.
-    * Ranking windows are keyed per item; ties break on the neighbor id
-    * after 1e-6 rounding so both engines rank identically.
-    */
-  private def q296(s: SparkSession, dir: String): DataFrame = {
-    val baskets = T(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey"))
-      .join(T(s, dir, "part").select(col("p_partkey"), col("p_brand")),
-        col("l_partkey") === col("p_partkey"))
-      .select(col("l_orderkey").as("basket"), col("p_brand").as("item"))
-    graft.operators.Affinity.itemNeighbors(baskets, "basket", "item", k = 3)
-      .orderBy(col("item"), col("rank"))
-  }
-
-  /** Deterministic Poisson bootstrap ([[graft.operators.Sampling
-    * .poissonBootstrap]]): per-segment mean order total with a 40-resample
-    * [10%, 90%] percentile interval — counter-based-hash weights, no RNG
-    * state, no shuffle for the draw; the expansion aggregates map-side and
-    * everything after is |segments|·40-sized.
-    */
-  private def q297(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "orders")
-      .join(T(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .select(col("c_mktsegment").as("seg"), col("o_orderkey"),
-        col("o_totalprice"))
-    graft.operators.Sampling.poissonBootstrap(base, "seg", "o_orderkey",
-        "o_totalprice", b = 40, salt = "bs1")
-      .orderBy(col("seg"))
-  }
-
-  /** Column-level lineage ([[graft.plans.Lineage.columnLineage]]) of a
-    * join→agg→window→literal query, extracted from the ANALYZED plan —
-    * pure metadata, nothing executes. The oracle is the independently
-    * hand-derived edge list: aggregates trace to their leaf columns,
-    * the window share traces THROUGH the aliased aggregate to the same
-    * leaf, and literal/count columns report the (null, null) no-lineage
-    * row.
-    */
-  private def q298(s: SparkSession, dir: String): DataFrame = {
-    val orders = T(s, dir, "orders")
-    val customer = T(s, dir, "customer")
-    val q = orders.select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      .join(customer.select(col("c_custkey"), col("c_mktsegment")),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_orders"), sumx(col("o_totalprice")).as("revenue"))
-      .withColumn("revenue_share",
-        round(col("revenue") / sum(col("revenue")).over(Window.partitionBy()), 6))
-      .withColumn("tag", lit("gold"))
-    graft.plans.Lineage
-      .columnLineage(q, Map("orders" -> orders, "customer" -> customer))
-      .orderBy(col("out_col"), col("src_table"), col("src_col"))
-  }
-
-  /** BOM explosion ([[graft.operators.Graph.weightedClosure]]) over the
-    * divisor DAG (k → 2k needs 2, k → 3k needs 3, keys ≤ 600): total
-    * transitive quantity per (assembly, component) = Σ over paths of the
-    * product of edge quantities — the sum-product semiring where pointer
-    * doubling would double-count, handled by the unique-prefix recursion.
-    * The oracle walks every path with a recursive CTE and sums products.
-    */
-  private def q299(s: SparkSession, dir: String): DataFrame = {
-    val nodes = T(s, dir, "part").filter(col("p_partkey").between(1, 600))
-      .select(col("p_partkey").as("k"))
-    def scaled(m: Int, q: Int) = nodes.as("a")
-      .join(nodes.as("b"), col("b.k") === col("a.k") * m)
-      .select(col("a.k").as("src"), col("b.k").as("dst"),
-        lit(q.toLong).as("qty"))
-    val edges = scaled(2, 2).unionByName(scaled(3, 3))
-    graft.operators.Graph.weightedClosure(edges, rounds = 10)
-      .select(col("src"), col("dst"), col("total_qty").cast("long").as("total_qty"))
-      .orderBy(col("src"), col("dst"))
-  }
-
-  /** Streaming running z-score monitor ([[graft.streaming.EventsStream
-    * .zscoreAlerts]] via [[graft.streaming.StreamVerify.zscoreStream]]):
-    * three longs of state per event type, exact-BigInt alert test, REAL
-    * cross-batch baseline carry over the time-sliced staging — must equal
-    * the batch exclusive-prefix-window replay row for row.
-    */
-  private def q300(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify
-      .zscoreStream(s, q259Events(s, dir), minN = 30, z = 3)
-      .orderBy(col("event_type"), col("sec"), col("event_id"))
-
-  /** Per-type changepoint ([[graft.operators.Trend.changePointPerKey]])
-    * over daily event counts: the single binary-segmentation split that
-    * maximizes the two-segment SSE reduction — "when did the level
-    * shift", from exact integer prefix sums in one ordered pass per key.
-    */
-  private def q301(s: SparkSession, dir: String): DataFrame = {
-    val daily = T(s, dir, "events")
-      .groupBy(col("event_type"),
-        expr("(ts div 1000000000) div 86400").as("day"))
-      .agg(count(lit(1)).as("n_events"))
-    graft.operators.Trend.changePointPerKey(daily, "event_type", "day",
-        "n_events")
-      .orderBy(col("event_type"))
-  }
-
-  /** Positional proximity search (the slop-query surface of the q205
-    * phrase index): docs where BOTH probe terms occur within 10 token
-    * positions — per-doc position lists joined doc-locally (cost bounded
-    * by per-doc term frequency, never cross-doc), exact integer distance.
-    */
-  private def q302(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
-    val tok = split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " ")
-    val probe = docs.filter(col("doc_id") === 0)
-      .select(element_at(tok, 1).as("t0"), element_at(tok, 4).as("t1"))
-      .head()
-    val (t0, t1) = (probe.getString(0), probe.getString(1))
-    val toks = docs.select(col("doc_id"), posexplode(tok).as(Seq("pos", "w")))
-    def positions(t: String, nm: String) = toks.filter(col("w") === t)
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as(s"n_$nm"), collect_list(col("pos")).as(s"ps_$nm"))
-    positions(t0, "a").join(positions(t1, "b"), Seq("doc_id"))
-      .select(col("doc_id"), col("n_a"), col("n_b"),
-        expr("""aggregate(flatten(transform(ps_a, p -> transform(ps_b, r -> abs(p - r)))),
-                cast(9223372036854775807 as bigint), (acc, x) -> least(acc, cast(x as bigint)))""")
-          .as("min_dist"))
-      .filter(col("min_dist") <= 10)
-      .orderBy(col("doc_id"))
-  }
-
-  /** Calendar dimension with business-day arithmetic — the date-dim
-    * staple every warehouse materializes: one row per day spanning the
-    * order-date range with ISO week/weekday fields and a running
-    * BUSINESS-DAY sequence (subtracting two rows' business_seq = business
-    * days between, the add_business_days primitive). The spine is
-    * date-range-sized metadata, so the one unpartitioned window is
-    * aggregate-scale by construction.
-    */
-  private def q303(s: SparkSession, dir: String): DataFrame = {
-    val b = T(s, dir, "orders")
-      .agg(min(to_date(col("o_orderdate"))).as("lo"),
-        max(to_date(col("o_orderdate"))).as("hi"))
-    val spine = b.select(explode(sequence(col("lo"), col("hi"))).as("d"))
-    val run = Window.orderBy(col("d"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    spine
-      .withColumn("dow", weekday(col("d")).cast("long"))
-      .withColumn("is_weekend", col("dow") >= 5)
-      .withColumn("business_seq",
-        sum(when(col("dow") >= 5, 0L).otherwise(1L)).over(run))
-      .select(date_format(col("d"), "yyyy-MM-dd").as("date_id"), col("dow"),
-        col("is_weekend"), month(col("d")).cast("long").as("month"),
-        quarter(col("d")).cast("long").as("quarter"),
-        weekofyear(col("d")).cast("long").as("iso_week"), col("business_seq"))
-      .orderBy(col("date_id"))
-  }
-
-  /** Behavioral-regularity (bot) score: per-user entropy of the
-    * inter-event-gap distribution over fixed edges — scripted traffic
-    * collapses into one bucket (entropy → 0), humans spread out. One
-    * lag-window pass for gaps, one combine; entropy terms on the 1e-9
-    * grid decimal-summed per user (the q256 discipline), so the score is
-    * parallelism- and engine-exact. Flags users with ≥ 20 gaps and
-    * entropy < 0.6 nats.
-    */
-  private def q304(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "events").select(col("user_id"), col("event_id"),
-      expr("ts div 1000000000").as("sec"))
-    val w = Window.partitionBy(col("user_id")).orderBy(col("sec"), col("event_id"))
-    val gaps = e.withColumn("gap", col("sec") - lag(col("sec"), 1).over(w))
-      .filter(col("gap").isNotNull)
-      .withColumn("bucket",
-        when(col("gap") < 60, 0L).when(col("gap") < 300, 1L)
-          .when(col("gap") < 900, 2L).when(col("gap") < 3600, 3L)
-          .when(col("gap") < 21600, 4L).otherwise(5L))
-    val byUser = Window.partitionBy(col("user_id"))
-    val counts = gaps.groupBy(col("user_id"), col("bucket"))
-      .agg(count(lit(1)).as("nb"))
-      .withColumn("n", sum(col("nb")).over(byUser))
-    val p = col("nb").cast("double") / col("n").cast("double")
-    counts
-      .withColumn("term",
-        round(negate(p * log(p)), 9).cast(DecimalType(18, 9)))
-      .groupBy(col("user_id"))
-      .agg(max(col("n")).as("n_gaps"),
-        count(lit(1)).as("n_buckets"),
-        round(max(col("nb")).cast("double") /
-          max(col("n")).cast("double"), 6).as("top_share"),
-        sum(col("term")).cast("double").as("entropy"))
-      .withColumn("bot_like", col("n_gaps") >= 20 && col("entropy") < 0.6)
-      .orderBy(col("user_id"))
-  }
-
-  /** Two-hop recommendation candidates over the category co-occurrence
-    * graph: categories reachable through a shared neighbor but NOT
-    * directly co-bought (the anti-join is the point — direct pairs are
-    * already merchandised; the second ring is where discovery lives).
-    * The edge set is the TOP-400 pairs by support (rank-based, so the
-    * graph keeps the same sparsity at every data scale — a fixed
-    * threshold saturates as co-occurrence counts grow with volume); the
-    * ranking window runs over the ≤ domain² pair AGGREGATE, never raw
-    * rows. Score = distinct bridges + bottleneck support Σ min(w_ab,
-    * w_bc) — exact integers.
-    */
-  private def q306(s: SparkSession, dir: String): DataFrame = {
-    val baskets = T(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_partkey"))
-      .join(T(s, dir, "part").select(col("p_partkey"), col("p_brand")),
-        col("l_partkey") === col("p_partkey"))
-      .select(col("l_orderkey").as("basket"),
-        (col("p_partkey") % 200).as("item"))
-    val pairs = graft.operators.Affinity
-      .pairCounts(baskets, "basket", "item")
-      .withColumn("__rk", row_number().over(Window.orderBy(
-        col("n_ab").desc, col("item_a").asc, col("item_b").asc)))
-      .filter(col("__rk") <= 400).drop("__rk")
-      // 400 rows after the deterministic top-k; `edges` doubles it and is
-      // then referenced THREE times (e1, e2, anti) — without the pin the
-      // whole basket/pair/window build ran once per path (12 Generate
-      // subtrees in the plan)
-      .localCheckpoint(true)
-    val edges = pairs.select(col("item_a").as("u"), col("item_b").as("v"),
-        col("n_ab").as("w"))
-      .unionByName(pairs.select(col("item_b").as("u"), col("item_a").as("v"),
-        col("n_ab").as("w")))
-    val twoHop = edges.as("e1")
-      .join(edges.as("e2"), col("e1.v") === col("e2.u"))
-      .filter(col("e1.u") =!= col("e2.v"))
-      .select(col("e1.u").as("src"), col("e2.v").as("rec"),
-        col("e1.v").as("bridge"), least(col("e1.w"), col("e2.w")).as("bw"))
-    twoHop.join(edges.select(col("u"), col("v")),
-        col("src") === col("u") && col("rec") === col("v"), "left_anti")
-      .groupBy(col("src"), col("rec"))
-      .agg(count(lit(1)).as("n_bridges"), sum(col("bw")).as("bottleneck_support"))
-      .orderBy(col("src"), col("rec"))
-  }
-
-  /** SQL-text column lineage ([[graft.plans.Lineage.columnLineageSql]]):
-    * the q298 walker anchored on VIEW NAMES instead of DataFrame objects
-    * — the shape a catalog needs, since production queries arrive as SQL
-    * text over registered tables, not as in-process frames. The boundary
-    * is the `SubqueryAlias` the analyzer wraps around each resolved
-    * view; the oracle is the independently hand-derived edge list.
-    */
-  private def q307(s: SparkSession, dir: String): DataFrame = {
-    T(s, dir, "orders").createOrReplaceTempView("orders_v")
-    T(s, dir, "customer").createOrReplaceTempView("customer_v")
-    val q = s.sql("""
-      SELECT c.c_mktsegment AS segment,
-             count(*) AS n_orders,
-             CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-               AS revenue,
-             upper(c.c_mktsegment) AS segment_uc,
-             'audited' AS tag
-      FROM orders_v o JOIN customer_v c ON o.o_custkey = c.c_custkey
-      GROUP BY c.c_mktsegment""")
-    graft.plans.Lineage.columnLineageSql(q, Set("orders_v", "customer_v"))
-      .orderBy(col("out_col"), col("src_table"), col("src_col"))
-  }
-
-  /** Arbitrary-state v2 profile ([[graft.streaming.EventsStream
-    * .twsProfile]] via [[graft.streaming.StreamVerify.twsProfileStream]]):
-    * per-user lifetime (events, sessions) counters in TWO named value
-    * states on `transformWithState` + RocksDB — Spark 4's successor API
-    * to flatMapGroupsWithState, exercised under the same oracle gate as
-    * the rest of the streaming surface. Must equal the batch
-    * sessionization count row for row.
-    */
-  private def q308(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify
-      .twsProfileStream(s, q259Events(s, dir), gapSec = 1800)
-      .groupBy(col("user_id"))
-      .agg(max(col("n_events")).as("n_events"),
-        max(col("n_sessions")).as("n_sessions"))
-      .orderBy(col("user_id"))
-
-  /** Event-time TIMERS on the arbitrary-state v2 API
-    * ([[graft.streaming.EventsStream.twsSessionTimers]]): sessions are
-    * finalized by `registerTimer`/`handleExpiredTimer` when the watermark
-    * passes (last + gap) — the transformWithState family member a
-    * production session pipeline migrating off
-    * flatMapGroupsWithState's event-time timeout actually needs.
-    * Time-sliced + sentinel-staged input (see q312Events); append-mode
-    * emissions are final and must equal batch q15 sessionization.
-    */
-  private def q312(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify
-      .twsSessionTimersStream(s, q312Events(s, dir), gapSec = 1800)
-      .select(col("user_id"), col("start_sec"), col("end_sec"),
-        col("n_events"))
-      .orderBy(col("user_id"), col("start_sec"))
-
-  /** TTL'd state on the arbitrary-state v2 API
-    * ([[graft.streaming.EventsStream.twsFirstSeenTtl]]): the first-seen
-    * marker per (user, event_type) lives in value state created with a
-    * REAL `TTLConfig` duration, so the key space self-evicts at
-    * production scale. The gate's TTL (1h) exceeds the drain wall-clock:
-    * nothing expires mid-run, cross-batch suppression is real, and the
-    * drained union equals exact batch first-per-key. Expiry itself is
-    * proven in StreamingSpec across checkpoint-resumed runs.
-    */
-  private def q313(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify
-      .twsFirstSeenTtlStream(s, q259Events(s, dir),
-        java.time.Duration.ofHours(1))
-      .orderBy(col("user_id"), col("event_type"))
-
-  /** `StatefulProcessorWithInitialState`
-    * ([[graft.streaming.EventsStream.twsProfileSeeded]]): per-user
-    * lifetime totals seeded from a batch aggregate over the first time
-    * tertile; only later events stream. The drained totals (unioned with
-    * seeded users the stream never touched) must equal the FULL-history
-    * aggregate — which holds only if `handleInitialState` installed every
-    * seed. The migration shape for moving a standing aggregate onto a new
-    * streaming job without replaying history.
-    */
-  private def q314(s: SparkSession, dir: String): DataFrame = {
-    val raw = s.read.parquet(s"$dir/events.parquet")
-    val secE = expr("unix_micros(cast(ts as timestamp)) div 1000000")
-    val b = raw.agg(min(secE).as("lo"), max(secE).as("hi")).collect()(0)
-    val cutoff = b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 3
-    val initial = raw.filter(secE <= cutoff)
-      .groupBy(col("user_id"))
-      .agg(count(lit(1)).as("n_events"),
-        (sum(col("value").cast(DecimalType(18, 2))) * 100)
-          .cast("long").as("sum_cents"))
-    val drained = graft.streaming.StreamVerify
-      .twsProfileSeededStream(s, q259Events(s, dir), initial, cutoff)
-    // cumulative update-mode emissions: per key the row with max n wins;
-    // users whose every event predates the cutoff never stream — their
-    // answer IS their seed
-    val reduced = drained.groupBy(col("user_id"))
-      .agg(max(struct(col("n_events"), col("sum_cents"))).as("m"))
-      .select(col("user_id"), col("m.n_events").as("n_events"),
-        col("m.sum_cents").as("sum_cents"))
-    reduced
-      .unionByName(initial.join(reduced, Seq("user_id"), "left_anti"))
-      .orderBy(col("user_id"))
-  }
-
-  /** Co-partitioned STAR join: fact (lineitem) and the orders leg both
-    * bucketed ×8 on the order key — their join is exchange-free by
-    * layout (BucketedJoinSpec asserts it on the executed plan); the
-    * customer dimension rides a broadcast. The 100 TB shape: ONE shuffle
-    * saved on the biggest join in the schema, dims never shuffled.
-    */
-  private def q309(s: SparkSession, dir: String): DataFrame = {
-    val tag = math.abs(dir.hashCode).toString
-    val (tl, to) = (s"graft_q309_lineitem_$tag", s"graft_q309_orders_$tag")
-    val base = scratch(dir, "q309")
-    T(s, dir, "lineitem")
-      .select(col("l_orderkey"), col("l_quantity"), col("l_extendedprice"))
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$base/lineitem")
-      .bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-      .saveAsTable(tl)
-    T(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_orderpriority"))
-      .write.mode("overwrite").format("parquet")
-      .option("path", s"$base/orders")
-      .bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-      .saveAsTable(to)
-    s.table(tl)
-      .join(s.table(to), col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(T(s, dir, "customer")
-        .select(col("c_custkey"), col("c_mktsegment"))),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_lines"),
-        sumx(col("l_extendedprice")).as("revenue"),
-        sum(floor(col("l_quantity")).cast("long")).as("total_qty"))
-      .orderBy(col("c_mktsegment"), col("o_orderpriority"))
-  }
-
-  /** RELATIONAL DIVISION — "suppliers who supply ALL the probe parts" —
-    * the classic for-all quantifier SQL lacks as a primitive, as the
-    * double-anti-join: candidates × probe (a broadcast of the fixed-size
-    * probe set), minus pairs that exist, leaves each candidate's MISSING
-    * requirements; whoever has none qualifies. Every join is equi-keyed;
-    * the one nested-loop is the 2-row probe broadcast (the scalar
-    * pattern). Output carries each qualifier's volume over the probe.
-    */
-  private def q310(s: SparkSession, dir: String): DataFrame = {
-    val probe = T(s, dir, "part").select(col("p_partkey"))
-      .orderBy(col("p_partkey")).limit(2)
-    val sp = T(s, dir, "lineitem")
-      .select(col("l_suppkey"), col("l_partkey")).distinct()
-    val missing = T(s, dir, "supplier").select(col("s_suppkey"))
-      .crossJoin(broadcast(probe))
-      .join(sp, col("s_suppkey") === col("l_suppkey") &&
-        col("p_partkey") === col("l_partkey"), "left_anti")
-      .select(col("s_suppkey")).distinct()
-    val qualified = T(s, dir, "supplier").select(col("s_suppkey"))
-      .join(missing, Seq("s_suppkey"), "left_anti")
-    val volume = T(s, dir, "lineitem")
-      .join(broadcast(probe), col("l_partkey") === col("p_partkey"))
-      .groupBy(col("l_suppkey"))
-      .agg(count(lit(1)).as("n_lines"),
-        sum(floor(col("l_quantity")).cast("long")).as("total_qty"))
-    qualified.join(volume, col("s_suppkey") === col("l_suppkey"))
-      .select(col("s_suppkey"), col("n_lines"), col("total_qty"))
-      .orderBy(col("s_suppkey"))
-  }
-
-  /** Hierarchical share-of-parent (ratio-to-report): revenue per
-    * (region, nation) with each nation's share of its REGION and each
-    * region's share of the TOTAL — the BI staple behind every treemap.
-    * Window sums run in DECIMAL over the ≤|nations| aggregate (double
-    * window sums would be partition-order-dependent); ratios surface as
-    * rounded doubles.
-    */
-  private def q311(s: SparkSession, dir: String): DataFrame = {
-    val rev = T(s, dir, "orders")
-      .join(T(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(T(s, dir, "nation"), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(T(s, dir, "region")),
-        col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("r_name").as("region"), col("n_name").as("nation"))
-      .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("rev_d"))
-    val wRegion = Window.partitionBy(col("region"))
-    val wAll = Window.partitionBy()
-    rev
-      .withColumn("region_d", sum(col("rev_d")).over(wRegion))
-      .withColumn("total_d", sum(col("rev_d")).over(wAll))
-      .select(col("region"), col("nation"),
-        col("rev_d").cast("double").as("revenue"),
-        round(col("rev_d").cast("double") / col("region_d").cast("double"), 6)
-          .as("share_in_region"),
-        round(col("region_d").cast("double") / col("total_d").cast("double"), 6)
-          .as("region_share_of_total"))
-      .orderBy(col("region"), col("nation"))
-  }
-
-  /** Hourly OHLC bars per event type — the finance-standard candle
-    * rollup: open/close by deterministic (sec, event_id) argmin/argmax,
-    * high/low, volume, and a decimal-exact VWAP-style mean. ONE
-    * map-side-combined aggregation; no window over raw rows.
-    */
-  private def q305(s: SparkSession, dir: String): DataFrame = {
-    val e = T(s, dir, "events").select(col("event_type"), col("event_id"),
-      col("value"), expr("ts div 1000000000").as("sec"))
-      .withColumn("hour", expr("sec div 3600"))
-    e.groupBy(col("event_type"), col("hour"))
-      .agg(
-        min_by(col("value"), struct(col("sec"), col("event_id"))).as("open"),
-        max(col("value")).as("high"), min(col("value")).as("low"),
-        max_by(col("value"), struct(col("sec"), col("event_id"))).as("close"),
-        count(lit(1)).as("volume"),
-        round(sumx(col("value")) / count(lit(1)).cast("double"), 6)
-          .as("mean_value"))
-      .orderBy(col("event_type"), col("hour"))
-  }
-
-  /** Write–Audit–Publish ([[graft.sources.TxLake.publishBranch]]): batch
-    * 1 lands directly; batch 2 stages on a zero-copy branch, passes its
-    * audit, and publishes as one atomic data-free log commit; batch 3
-    * (deliberately poisoned with negative prices) stages on a second
-    * branch, FAILS its audit, and is never published — the parent table
-    * must show exactly batches 1 and 2.
-    */
-  private def q263(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.TxLake
-    val lake = scratch(dir, "q263") + "/lake"
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val o = T(s, dir, "orders").select(col("o_orderkey"), col("o_orderstatus"),
-      col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
-    TxLake.commit(s, lake, o.filter(col("o_orderkey") % 3 === 0))
-    def stageAuditPublish(name: String, batch: DataFrame): Unit = {
-      val br = TxLake.branch(lake, name)
-      TxLake.commit(s, br, batch)
-      // the audit runs against the STAGED snapshot (base + batch), the
-      // exact bytes a publish would make visible
-      val violations = TxLake.readSnapshot(s, br)
-        .filter(col("price") <= 0 || col("o_orderstatus").isNull).count()
-      if (violations == 0L) TxLake.publishBranch(lake, name, tag = name)
-    }
-    stageAuditPublish("wap_good", o.filter(col("o_orderkey") % 3 === 1))
-    stageAuditPublish("wap_bad",
-      o.filter(col("o_orderkey") % 3 === 2)
-        .withColumn("price", negate(col("price"))))
-    TxLake.readSnapshot(s, lake)
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"), sum(col("price")).cast("double").as("total"))
-      .orderBy(col("o_orderstatus"))
-  }
-
-  /** Lake HISTORY metadata table — the `DESCRIBE HISTORY` surface: one row
-    * per commit with its tag, rows added (logged at commit time), and the
-    * table's total row count AS OF that version — all answered from the
-    * transaction log and its per-file row accounting (q212), zero data
-    * files opened. The driver-visible result is fully declarative because
-    * the three tagged ingests partition the orders table by key thirds.
-    */
-  private def q246(s: SparkSession, dir: String): DataFrame = {
-    val root = scratch(dir, "q246")
-    graft.sources.LocalFs.deleteRecursively(root)
-    val o = T(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-    (0 until 3).foreach { t =>
-      TxLake.commit(s, root, o.filter(col("o_orderkey") % 3 === t),
-        tag = s"ingest-$t")
-    }
-    val rows = TxLake.commitAddCounts(root).map { case (v, tag, added) =>
-      (v, tag, added, TxLake.countRows(s, root, v).getOrElse(-1L))
-    }
-    s.createDataFrame(rows).toDF("version", "tag", "rows_added", "total_rows")
-      .orderBy(col("version"))
-  }
-
-  /** Scene-cut detection over video-ish payloads
-    * ([[graft.operators.Multimodal.sceneCuts]]): consecutive fixed-size
-    * frames compared byte-for-byte, cuts where the changed-byte ratio
-    * crosses the threshold — the shot-boundary pass of a video ingest
-    * pipeline, replayed by the oracle hex pair by hex pair.
-    */
-  private def q193(s: SparkSession, dir: String): DataFrame =
-    graft.operators.Multimodal.sceneCuts(
-      graft.operators.Multimodal.attachPayload(
-        T(s, dir, "documents").filter(col("doc_id") <= 200)))
-      .orderBy(col("doc_id"), col("frame_idx"))
-
-  /** Unigram-surprisal quality scoring — the perplexity-proxy filter a
-    * CCNet-style corpus pipeline runs before training: per-word
-    * negative log-probability under the corpus's own unigram model,
-    * averaged per document (high = rare-word soup / gibberish, low =
-    * boilerplate). Per-token terms hit the 9-decimal grid and accumulate
-    * in DECIMAL (order-independent, §6); the corpus scan is one explode
-    * + one broadcast-joined count table.
-    */
-  private def q194(s: SparkSession, dir: String): DataFrame = {
-    val words = T(s, dir, "documents").select(col("doc_id"),
-      explode(split(regexp_replace(lower(trim(col("text"))), "\\s+", " "), " "))
-        .as("w"))
-    val counts = words.groupBy(col("w")).agg(count(lit(1)).as("c"))
-    val tot = counts.agg(sum(col("c")).cast("double").as("n_total"))
-    words.join(counts, Seq("w")).join(broadcast(tot))
-      .select(col("doc_id"),
-        round(log(col("n_total") / col("c").cast("double")), 9)
-          .cast(DecimalType(28, 9)).as("nll"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_words"),
-        round(sum(col("nll")).cast("double") / count(lit(1)), 6).as("avg_nll"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** IVF-PQ composite ANN ([[Similarity.annIvfPq]]): coarse cells prune
-    * the search, PQ reconstructions replace the raw vectors in scoring —
-    * the IVFADC pairing, oracle-replayed end to end (coarse k-means +
-    * four codebook k-means + probe + ADC rank).
-    */
-  private def q195(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
-    Similarity.annIvfPq(emb, emb.filter(col("vec_id") < 10), "vec_id", "embedding", 64)
-  }
-
-  /** Incremental AGGREGATE-over-JOIN view maintenance
-    * ([[graft.operators.Incremental.mergeAggJoinAppend]]): the monthly
-    * revenue-per-nation rollup is initialized from one fact slice, then
-    * maintained by two append deltas — each enriched against the
-    * customer→nation dimension, aggregated to the view grain, and merged
-    * into only the touched partitions. Read-back equals the full
-    * recompute (the oracle): γ-merge(V, γ(ΔA ⋈ B)) = γ(A ⋈ B).
-    */
-  private def q201(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q201")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val dim = T(s, dir, "customer")
-      .select(col("c_custkey").as("o_custkey"), col("c_nationkey"))
-      .join(T(s, dir, "nation")
-        .select(col("n_nationkey").as("c_nationkey"), col("n_name")),
-        Seq("c_nationkey"))
-      .select(col("o_custkey"), col("n_name"))
-    val o = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
-      substring(col("o_orderdate").cast("string"), 1, 7).as("month_id"),
-      col("o_totalprice").cast(DecimalType(18, 2)).as("price"))
-    def slice(i: Int) = o.filter(pmod(col("o_orderkey"), lit(3)) === i)
-    val init = slice(0).join(dim, Seq("o_custkey"))
-      .groupBy(col("month_id"), col("n_name"))
-      .agg(count(lit(1)).as("n_orders"), sum(col("price")).as("revenue"))
-    PartitionedLake.writeAll(init, lake, Seq("month_id"))
-    for (i <- 1 to 2)
-      graft.operators.Incremental.mergeAggJoinAppend(s, lake, slice(i), dim,
-        joinKey = "o_custkey", keyCols = Seq("n_name"), partCol = "month_id",
-        measures = Seq("n_orders" -> count(lit(1)), "revenue" -> sum(col("price"))))
-    PartitionedLake.read(s, lake)
-      .select(col("month_id").cast("string").as("month_id"), col("n_name"),
-        col("n_orders"), col("revenue").cast("double").as("revenue"))
-      .orderBy(col("month_id"), col("n_name"))
-  }
-
-  /** Quarantine ingest flow ([[graft.operators.Quality.quarantineSplit]]):
-    * a feed with injected bad rows (negative prices, null statuses) is
-    * routed row-by-row — clean rows commit to the main table, failures to
-    * a dead-letter table tagged with every failed check — instead of
-    * q168's all-or-nothing rejection. Output = main-table aggregate ∪
-    * quarantine triage counts, both read back from their lakes.
-    */
-  private def q202(s: SparkSession, dir: String): DataFrame = {
-    val lakeM = scratch(dir, "q202_main")
-    val lakeQ = scratch(dir, "q202_quar")
-    graft.sources.LocalFs.deleteRecursively(lakeM)
-    graft.sources.LocalFs.deleteRecursively(lakeQ)
-    val o = T(s, dir, "orders")
-      .select(col("o_orderkey"),
-        when(col("o_orderkey") % 103 === 0, lit(null).cast("string"))
-          .otherwise(col("o_orderstatus")).as("o_orderstatus"),
-        when(col("o_orderkey") % 101 === 0, -col("o_totalprice"))
-          .otherwise(col("o_totalprice")).as("o_totalprice"))
-    val (clean, quarantined) = graft.operators.Quality.quarantineSplit(o, Seq(
-      "price_positive" -> (col("o_totalprice") > 0),
-      "status_present" -> col("o_orderstatus").isNotNull))
-    TxLake.commit(s, lakeM, clean)
-    TxLake.commit(s, lakeQ, quarantined)
-    val main = TxLake.readSnapshot(s, lakeM)
-      .groupBy(col("o_orderstatus").as("key"))
-      .agg(count(lit(1)).as("n"), sumx(col("o_totalprice")).as("total"))
-      .withColumn("part", lit("main"))
-    val quar = TxLake.readSnapshot(s, lakeQ)
-      .groupBy(col("reasons").as("key"))
-      .agg(count(lit(1)).as("n"),
-        lit(null).cast("double").as("total"))
-      .withColumn("part", lit("quarantine"))
-    main.unionByName(quar).orderBy(col("part"), col("key"))
-  }
-
-  /** Bounded map-side TOP-K aggregator
-    * ([[graft.functions.Aggregators.TopK]]): top-3 orders by price per
-    * market segment through a typed Aggregator whose k-bounded buffer
-    * does the ranking in the partial aggregation — each partition ships
-    * ≤ k rows per group to the shuffle, vs the window formulation's full
-    * per-group sort (the oracle, which must agree row-for-row).
-    */
-  private def q203(s: SparkSession, dir: String): DataFrame = {
-    val joined = T(s, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-      .join(T(s, dir, "customer")
-        .select(col("c_custkey").as("o_custkey"), col("c_mktsegment")),
-        Seq("o_custkey"))
-    joined
-      .groupBy(col("c_mktsegment"))
-      .agg(graft.functions.Aggregators.topK(3)(
-        col("o_totalprice"), col("o_orderkey")).as("top"))
-      .select(col("c_mktsegment"), posexplode(col("top")).as(Seq("i", "p")))
-      .select(col("c_mktsegment"), (col("i") + 1).cast("long").as("rnk"),
-        col("p._2").as("o_orderkey"), col("p._1").as("o_totalprice"))
-      .orderBy(col("c_mktsegment"), col("rnk"))
-  }
-
-  /** Deterministic negative sampling
-    * ([[graft.operators.Sampling.negativeSample]]): contrastive-pair
-    * negatives drawn from an md5 hash ring over the doc-id domain —
-    * rerun-identical, engine-portable, every draw replayed by the
-    * oracle.
-    */
-  private def q199(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
-    graft.operators.Sampling.negativeSample(
-      docs, docs.filter(col("doc_id") < 20), "doc_id", k = 5)
-      .orderBy(col("anchor"), col("neg_rank"))
-  }
-
-  /** Anti-entropy REPAIR ([[graft.operators.Reconcile.repair]]): q130's
-    * drifted replica (bumped balances, dropped keys, one orphan) is
-    * committed as a TxLake table, repaired from the source — orphans
-    * removed by deletion vector, drift upserted by affected-file MERGE —
-    * and proved converged in-gate (diffKeys re-run is empty). The oracle
-    * is simply the SOURCE's aggregate: repair must make the replica
-    * indistinguishable from it.
-    */
-  private def q198(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q198")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val a = T(s, dir, "customer")
-      .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
-        col("c_acctbal").cast(DecimalType(12, 2)).as("c_acctbal"),
-        col("c_mktsegment"))
-    val b = a.filter(col("c_custkey") % 89 =!= 0)
-      .withColumn("c_acctbal",
-        when(col("c_custkey") % 97 === 0, col("c_acctbal") + 1)
-          .otherwise(col("c_acctbal")))
-      .unionByName(s.sql(
-        """SELECT CAST(10000000 AS BIGINT) AS c_custkey, 'Customer#drift' AS c_name,
-          |CAST(0 AS INT) AS c_nationkey, CAST(1.00 AS DECIMAL(12,2)) AS c_acctbal,
-          |'BUILDING' AS c_mktsegment""".stripMargin))
-    TxLake.commit(s, lake, b.repartition(4, col("c_custkey")))
-    val (nDel, nUp) = graft.operators.Reconcile.repair(s, a, lake, "c_custkey", 64)
-    require(nDel >= 1 && nUp >= 2, s"injected drift must be found ($nDel, $nUp)")
-    val repaired = TxLake.readSnapshot(s, lake)
-    require(graft.operators.Reconcile.diffKeys(a, repaired, "c_custkey", 64).isEmpty,
-      "repair must converge to the source")
-    repaired
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("c_acctbal")).cast("double").as("total_bal"))
-      .orderBy(col("c_mktsegment"))
-  }
-
-  /** Bitmap set algebra ([[graft.operators.Sketches.bitmapPairCounts]]):
-    * audience-overlap counts for every event-type pair — exact
-    * intersection via word-level AND on the standing bitmap store, union
-    * and differences by inclusion–exclusion from the totals. The query
-    * class HLL only approximates.
-    */
-  private def q197(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(col("event_type"), col("user_id"))
-    graft.operators.Sketches.bitmapPairCounts(
-      graft.operators.Sketches.bitmapWords(ev, Seq("event_type"), "user_id"),
-      "event_type")
-      .orderBy(col("ga"), col("gb"))
-  }
-
-  /** Secondary key index over the lake ([[TxLake.buildKeyIndex]] /
-    * [[TxLake.readByKeys]]): point lookups on a HASH-SCATTERED table,
-    * where every file's [min, max] spans the whole key range and range
-    * skipping (q125/q182) prunes nothing — the inverted key→file map
-    * still opens only the files that contain probed keys (asserted
-    * in-gate: fewer files than active).
-    */
-  private def q196(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q196")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val o = T(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"),
-      col("o_orderstatus"), col("o_totalprice"))
-    // hash-scattered layout: 3 commits × 2 files, split by CUSTOMER hash,
-    // so order keys spread across every file
-    for (i <- 0 to 2)
-      TxLake.commit(s, lake,
-        o.filter(pmod(col("o_orderkey"), lit(3)) === i)
-          .repartition(2, col("o_custkey")))
-    TxLake.buildKeyIndex(s, lake, "o_orderkey", s"$lake/_idx")
-    // a point lookup is a HANDFUL of keys by definition — the 3 smallest
-    // order keys land in 3 different mod-3 commits, so at most 3 of the
-    // 6 files can contain them
-    val keys = o.orderBy(col("o_orderkey")).limit(3)
-      .select(col("o_orderkey").as("key"))
-    val keySet = keys.collect().map(_.getLong(0))
-    val opened = TxLake.filesForKeys(s, lake, s"$lake/_idx", keys)
-    require(opened.nonEmpty && opened.size < 6,
-      s"index must prune the 6-file layout, opened ${opened.size}")
-    TxLake.readByKeys(s, lake, s"$lake/_idx", keys)
-      .filter(col("o_orderkey").isin(keySet.map(x => x: Any): _*))
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** CHECK-constrained commits ([[TxLake.commitChecked]]): the valid load
-    * lands; a violating commit is rejected before any version is
-    * reserved, and the table is provably untouched by it.
-    */
-  private def q168(s: SparkSession, dir: String): DataFrame = {
-    val lake = scratch(dir, "q168")
-    graft.sources.LocalFs.deleteRecursively(lake)
-    val o = T(s, dir, "orders").select(
-      col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-      col("o_orderstatus"))
-    TxLake.commitChecked(s, lake, o, Seq(
-      "price_positive" -> (col("o_totalprice") > 0),
-      "key_present" -> col("o_orderkey").isNotNull))
-    val violating = o.withColumn("o_totalprice", -col("o_totalprice"))
-    val rejected =
-      try {
-        TxLake.commitChecked(s, lake, violating,
-          Seq("price_positive" -> (col("o_totalprice") > 0)))
-        false
-      } catch { case _: IllegalArgumentException => true }
-    require(rejected, "violating commit must be rejected")
-    require(TxLake.latestVersion(lake) == 1L,
-      "a rejected commit must leave no version behind")
-    TxLake.readSnapshot(s, lake)
-      .groupBy(col("o_orderstatus"))
-      .agg(count(lit(1)).as("n"), sumx(col("o_totalprice")).as("total"))
-      .orderBy(col("o_orderstatus"))
-  }
-
-  // ------------------------------------------------ §2.7 streaming (verify surface)
-
-  /** The file-stream source requires a DIRECTORY to monitor; the testdata
-    * keeps each table as a single parquet file. Stage a scratch directory
-    * holding a symlink to the events file (no data copy).
-    */
-  private def eventsPath(dir: String, name: String = "stream_events"): String = {
-    val staged = java.nio.file.Paths.get(scratch(dir, name))
-    val link = staged.resolve("events.parquet")
-    val target = java.nio.file.Paths.get(s"$dir/events.parquet")
-    java.nio.file.Files.createDirectories(staged)
-    // NOFOLLOW: a dangling or stale link must be detected as present and
-    // replaced — Files.exists(link) follows the link and would report false,
-    // after which createSymbolicLink throws FileAlreadyExistsException
-    val linkPresent = java.nio.file.Files.exists(
-      link, java.nio.file.LinkOption.NOFOLLOW_LINKS)
-    val stale = linkPresent &&
-      (!java.nio.file.Files.isSymbolicLink(link) ||
-        java.nio.file.Files.readSymbolicLink(link) != target)
-    if (stale) java.nio.file.Files.delete(link)
-    if (!linkPresent || stale)
-      java.nio.file.Files.createSymbolicLink(link, target)
-    staged.toString
-  }
-
-  /** Streaming tumbling-window aggregation (Trigger.AvailableNow → memory
-    * sink), hash-compared against the batch SQL — the streaming engine runs
-    * inside the correctness gate, not just in ScalaTest.
-    */
-  private def q53(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.hourly(s, eventsPath(dir))
-      .orderBy(col("hour"), col("event_type"))
-
-  /** Streaming gap sessionization via built-in session_window. */
-  private def q54(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.sessions(s, eventsPath(dir))
-      .orderBy(col("user_id"), col("start_sec"))
-
-  /** Streaming exact dedup (dropDuplicatesWithinWatermark). */
-  private def q55(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.dedupPairs(s, eventsPath(dir))
-      .orderBy(col("user_id"), col("event_type"))
-
-  /** Streaming bronze → partitioned lake → read-back aggregation. */
-  private def q56(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.lakeRoundTrip(s, eventsPath(dir), scratch(dir, "q56"))
-      .orderBy(col("date_id"))
-
-  /** Stream-stream interval join: purchases ⋈ same-user clicks within the
-    * preceding hour, both sides watermarked.
-    */
-  private def q77(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.streamStreamJoin(s, eventsPath(dir))
-      .orderBy(col("p_id"), col("c_id"))
-
-  /** q92's stream input: the events file plus ONE far-future sentinel row
-    * per join side (ts = max real ts + 1 day), staged next to the symlink.
-    * The outer join emits its unmatched rows only when the watermark passes
-    * their join window (see StreamVerify.streamStreamOuterJoin); the
-    * sentinels push the watermark past every real row so the drain is
-    * batch-equivalent. The two sentinels carry DISTINCT out-of-band user
-    * ids (-1, -2) so they cannot join each other, and are never emitted
-    * because the watermark never reaches their own timestamps. Written
-    * with the raw NTZ storage schema so it reads uniformly with the real
-    * file.
-    */
-  private def q92Events(s: SparkSession, dir: String): String = {
-    val staged = eventsPath(dir, "q92_events")
-    val sentinel = new java.io.File(s"$staged/zz_sentinel.parquet")
-    if (!sentinel.exists()) {
-      val maxNanos = T(s, dir, "events").agg(max(col("ts"))).head().getLong(0)
-      val ts = graft.streaming.EventsStream.ntzOfEpochSec(
-        maxNanos / 1000000000L + 86400L)
-      val rows = Seq(
-        org.apache.spark.sql.Row(-1L, ts, -1L, "purchase", 0.0, null),
-        org.apache.spark.sql.Row(-2L, ts, -2L, "click", 0.0, null))
-      val side = scratch(dir, "q92_sentinel")
-      s.createDataFrame(s.sparkContext.parallelize(rows, 1),
-        graft.streaming.EventsStream.rawEventsSchema)
-        .write.mode("overwrite").parquet(side)
-      // the file-stream source lists only direct children of the staged
-      // dir, so lift the part file out of the writer's output directory
-      val part = new java.io.File(side).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("sentinel write produced no part file"))
-      java.nio.file.Files.copy(part.toPath, sentinel.toPath)
-    }
-    staged
-  }
-
-  /** Stream-stream LEFT OUTER interval join: purchases with no same-user
-    * click in the preceding hour emit with a NULL click id, driven by
-    * watermark passage (sentinel-staged input, see q92Events).
-    */
-  private def q92(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.streamStreamOuterJoin(s, q92Events(s, dir))
-      .orderBy(col("p_id"), col("c_id"))
-
-  /** Stream-stream FULL OUTER interval join
-    * ([[graft.streaming.StreamVerify.streamStreamFullOuterJoin]]):
-    * completes the streaming join matrix (inner q77 / left q92 / full
-    * here) on the same sentinel-staged input.
-    */
-  private def q171(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.streamStreamFullOuterJoin(s, q92Events(s, dir))
-      .orderBy(col("p_id"), col("c_id"))
-
-  /** q135's stream input: the events table split into TWO staged files by
-    * event_id parity (raw NTZ storage schema, so it reads uniformly).
-    * Each user's sessions therefore span both files, and with
-    * maxFilesPerTrigger=1 the update-mode drain genuinely re-emits grown
-    * sessions across micro-batches — the semantics under test. File
-    * mtimes are pinned so the source's (mtime, path) processing order is
-    * deterministic, though the supersede pruning is order-correct either
-    * way.
-    */
-  private def q135Events(s: SparkSession, dir: String): String = {
-    val staged = java.nio.file.Paths.get(scratch(dir, "q135_events"))
-    java.nio.file.Files.createDirectories(staged)
-    val halves = Seq("a_even.parquet" -> 0, "b_odd.parquet" -> 1)
-    if (!halves.forall(h => staged.resolve(h._1).toFile.exists())) {
-      parStage(halves.size) { i =>
-        val (name, parity) = halves(i)
-        val side = scratch(dir, s"q135_half$parity")
-        s.read.parquet(s"$dir/events.parquet")
-          .filter(col("event_id") % 2 === parity)
-          .coalesce(1).write.mode("overwrite").parquet(side)
-        val part = new java.io.File(side).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error("half write produced no part file"))
-        val dest = staged.resolve(name)
-        java.nio.file.Files.copy(part.toPath, dest,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dest.toFile.setLastModified(1600000000000L + parity * 10000L)
-      }
-    }
-    staged.toString
-  }
-
-  /** Time-sliced staging for the deleting CDC stream (q259): three files,
-    * each holding a strictly later floored-second range than the last,
-    * mtimes forcing oldest-first processing. Slicing on the FLOORED
-    * second (the engine's canonical ordering unit) keeps equal-second
-    * rows in one slice, so the per-batch newest row is the global newest
-    * wherever the tie-breaking event_id lands.
-    */
-  private def q259Events(s: SparkSession, dir: String): String = {
-    val staged = java.nio.file.Paths.get(scratch(dir, "q259_events"))
-    java.nio.file.Files.createDirectories(staged)
-    val names = Seq("t0.parquet", "t1.parquet", "t2.parquet")
-    if (!names.forall(n => staged.resolve(n).toFile.exists())) {
-      val raw = s.read.parquet(s"$dir/events.parquet")
-      val sec = expr("unix_micros(cast(ts as timestamp)) div 1000000")
-      val b = raw.agg(min(sec).as("lo"), max(sec).as("hi")).collect()(0)
-      val (lo, hi) = (b.getLong(0), b.getLong(1))
-      val (b1, b2) = (lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3)
-      val slices = Seq(sec <= b1, sec > b1 && sec <= b2, sec > b2)
-      names.zip(slices).zipWithIndex.foreach { case ((name, cond), i) =>
-        val side = scratch(dir, s"q259_slice$i")
-        raw.filter(cond).coalesce(1).write.mode("overwrite").parquet(side)
-        val part = new java.io.File(side).listFiles()
-          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-          .getOrElse(sys.error("slice write produced no part file"))
-        val dest = staged.resolve(name)
-        java.nio.file.Files.copy(part.toPath, dest,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        dest.toFile.setLastModified(1600000000000L + i * 10000L)
-      }
-    }
-    staged.toString
-  }
-
-  /** q312's stream input: the q259 time slices PLUS a far-future sentinel
-    * file (user -1, ts = max real ts + 1 day) with the LATEST mtime, so it
-    * is processed last and pushes the watermark past every real session's
-    * close — firing every registered event-time timer. The sentinel's own
-    * session can never finalize (the watermark trails its event time).
-    */
-  private def q312Events(s: SparkSession, dir: String): String = {
-    val staged = java.nio.file.Paths.get(scratch(dir, "q312_events"))
-    java.nio.file.Files.createDirectories(staged)
-    val src = java.nio.file.Paths.get(q259Events(s, dir))
-    Seq("t0.parquet", "t1.parquet", "t2.parquet").zipWithIndex.foreach {
-      case (name, i) =>
-        val dest = staged.resolve(name)
-        if (!dest.toFile.exists())
-          java.nio.file.Files.copy(src.resolve(name), dest)
-        dest.toFile.setLastModified(1600000000000L + i * 10000L)
-    }
-    val sentinel = staged.resolve("t3_sentinel.parquet")
-    if (!sentinel.toFile.exists()) {
-      val maxNanos = T(s, dir, "events").agg(max(col("ts"))).head().getLong(0)
-      val ts = graft.streaming.EventsStream.ntzOfEpochSec(
-        maxNanos / 1000000000L + 86400L)
-      val side = scratch(dir, "q312_sentinel")
-      s.createDataFrame(
-        s.sparkContext.parallelize(
-          Seq(org.apache.spark.sql.Row(-1L, ts, -1L, "noop", 0.0, null)), 1),
-        graft.streaming.EventsStream.rawEventsSchema)
-        .write.mode("overwrite").parquet(side)
-      val part = new java.io.File(side).listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error("sentinel write produced no part file"))
-      java.nio.file.Files.copy(part.toPath, sentinel)
-    }
-    sentinel.toFile.setLastModified(1600000000000L + 30000L)
-    staged.toString
-  }
-
-  /** Session-window aggregation in UPDATE mode: grown sessions re-emitted
-    * per micro-batch, superseded emissions pruned, final state
-    * hash-equal to batch sessionization
-    * ([[graft.streaming.StreamVerify.sessionsUpdateMode]]).
-    */
-  private def q135(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.sessionsUpdateMode(
-      s, q135Events(s, dir), scratch(dir, "q135"))
-      .orderBy(col("user_id"), col("start_sec"))
-
-  /** Built-in session_window in APPEND mode: each session emitted exactly
-    * once at watermark passage (sentinel-staged input, see q92Events) —
-    * completes the session-mode matrix (q54 complete, q135 update)
-    * ([[graft.streaming.StreamVerify.sessionsAppendMode]]).
-    */
-  private def q142(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.sessionsAppendMode(s, q92Events(s, dir))
-      .orderBy(col("user_id"), col("start_sec"))
-
-  /** Per-key stream alerting against a trailing baseline: append-mode
-    * hourly windows finalized by watermark passage (sentinel-staged input,
-    * see q92Events), each compared to the mean of its key's previous 24
-    * closed hours ([[graft.streaming.StreamVerify.hourlyAlerts]]).
-    */
-  private def q136(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.hourlyAlerts(s, q92Events(s, dir))
-      .orderBy(col("event_type"), col("hour"))
-
-  /** Stream-static join: event stream enriched against the static customer
-    * dimension, aggregated per market segment.
-    */
-  private def q69(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamVerify.staticJoin(
-      s, eventsPath(dir), T(s, dir, "customer"), "c_custkey")
-      .orderBy(col("c_mktsegment"))
-
-  // ---------------------------------------------------------------- maps
+  /** DuckDB oracle SQL by query name; rows-only queries are absent. Built
+    * on first use. */
+  lazy val oracleSql: Map[String, String] = Query.oracleSql(Query.all)
 
   /** Queries that start (and drain) a real Structured Streaming query.
     * The bench runs these LAST: a drained stream leaves state-store
@@ -12560,3636 +27,17 @@ object SparkEntry {
     * next (r3 measured 2–7× spikes on alphabetical neighbors), so
     * batch timings must never follow a drain inside a measured pass.
     */
-  val streamingQueries: Set[String] = Set(
-    "q53_stream_hourly", "q54_stream_sessions", "q55_stream_dedup",
-    "q56_stream_lake", "q69_stream_static_join", "q77_stream_stream_join",
-    "q92_stream_outer_join", "q107_stream_custom_state",
-    "q121_exactly_once_sink", "q136_stream_alerts",
-    "q135_stream_update_sessions", "q142_stream_append_sessions",
-    "q165_stream_cdc_apply", "q171_stream_full_outer",
-    "q180_stream_resume", "q185_stream_cms",
-    "q200_stream_bitmap", "q206_stream_dv_erasure",
-    "q219_stream_components", "q228_stream_topk", "q242_stream_gap_monitor",
-    "q259_stream_cdc_deletes", "q267_stream_retention",
-    "q284_stream_debounce", "q300_stream_zscore", "q308_tws_profile",
-    "q530_stream_repeated_spans", "q531_stream_logrank",
-    "q540_stream_james_stein", "q542_stream_wasserstein",
-    "q545_stream_theils_u", "q549_stream_hodges_lehmann",
-    "q550_stream_cuped", "q553_stream_strata_att",
-    "q555_stream_trend_ols", "q562_stream_kanon",
-    "q633_stream_lorenz", "q636_stream_concurrency",
-    "q644_stream_ltv", "q647_stream_mcf", "q653_stream_iv",
-    "q662_stream_yule_walker", "q676_stream_ma1", "q684_stream_erlang")
+  val streamingQueries: Set[String] =
+    Query.all.filter(_.streaming).map(_.name).toSet
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_bronze_flatten" -> (q01 _),
-    "q02_silver_category" -> (q02 _),
-    "q03_gold_union" -> (q03 _),
-    "q04_delete_insert" -> (q04 _),
-    "q05_schema_enforce" -> (q05 _),
-    "q06_jdbc_sink" -> (q06 _),
-    "q07_agg_full" -> (q07 _),
-    "q08_filter_pushdown" -> (q08 _),
-    "q09_join_broadcast" -> (q09 _),
-    "q10_join_multiway" -> (q10 _),
-    "q11_window" -> (q11 _),
-    "q12_semi_anti" -> (q12 _),
-    "q13_distinct_topk" -> (q13 _),
-    "q14_events_hourly" -> (q14 _),
-    "q15_sessionize" -> (q15 _),
-    "q16_pivot" -> (q16 _),
-    "q17_rollup" -> (q17 _),
-    "q18_quantiles" -> (q18 _),
-    "q19_skew_salted_agg" -> (q19 _),
-    "q20_asof_join" -> (q20 _),
-    "q21_dedup_exact" -> (q21 _),
-    "q22_dedup_minhash" -> (q22 _),
-    "q23_dedup_simhash" -> (q23 _),
-    "q24_ngram_jaccard" -> (q24 _),
-    "q25_dedup_embed" -> (q25 _),
-    "q26_knn_brute" -> (q26 _),
-    "q27_ann_lsh" -> (q27 _),
-    "q28_vec_stats" -> (q28 _),
-    "q29_text_stats" -> (q29 _),
-    "q30_langid" -> (q30 _),
-    "q31_token_count" -> (q31 _),
-    "q32_fingerprint" -> (q32 _),
-    "q33_multimodal_meta" -> (q33 _),
-    "q34_json_source" -> (q34 _),
-    "q35_csv_source" -> (q35 _),
-    "q36_partition_prune" -> (q36 _),
-    "q37_approx_distinct" -> (q37 _),
-    "q38_bucketed_join" -> (q38 _),
-    "q39_clean_corpus" -> (q39 _),
-    "q40_ann_ivf" -> (q40 _),
-    "q41_cube" -> (q41 _),
-    "q42_explode_words" -> (q42 _),
-    "q43_scalar_subquery" -> (q43 _),
-    "q44_asof_tolerance" -> (q44 _),
-    "q45_range_window" -> (q45 _),
-    "q46_frame_sample" -> (q46 _),
-    "q47_hash_sample" -> (q47 _),
-    "q48_stratified_sample" -> (q48 _),
-    "q49_edit_distance" -> (q49 _),
-    "q50_funnel" -> (q50 _),
-    "q51_nested_json" -> (q51 _),
-    "q52_rank_family" -> (q52 _),
-    "q57_range_join" -> (q57 _),
-    "q60_regex_extract" -> (q60 _),
-    "q64_scd2_islands" -> (q64 _),
-    "q70_array_agg" -> (q70 _),
-    "q71_event_paths" -> (q71 _),
-    "q72_cohort" -> (q72 _),
-    "q73_orc_roundtrip" -> (q73 _),
-    "q74_dynamic_pruning" -> (q74 _),
-    "q75_salted_join" -> (q75 _),
-    "q76_weighted_sample" -> (q76 _),
-    "q65_resample_ffill" -> (q65 _),
-    "q66_unpivot" -> (q66 _),
-    "q67_histogram" -> (q67 _),
-    "q68_cdc_compact" -> (q68 _),
-    "q61_date_functions" -> (q61 _),
-    "q62_string_functions" -> (q62 _),
-    "q63_argmax" -> (q63 _),
-    "q58_set_ops" -> (q58 _),
-    "q59_word_clusters" -> (q59 _),
-    "q53_stream_hourly" -> (q53 _),
-    "q54_stream_sessions" -> (q54 _),
-    "q55_stream_dedup" -> (q55 _),
-    "q56_stream_lake" -> (q56 _),
-    "q69_stream_static_join" -> (q69 _),
-    "q77_stream_stream_join" -> (q77 _),
-    "q92_stream_outer_join" -> (q92 _),
-    "q93_api_ingest" -> (q93 _),
-    "q94_zorder3" -> (q94 _),
-    "q95_cms_heavy_hitters" -> (q95 _),
-    "q96_bm25" -> (q96 _),
-    "q97_incremental_agg" -> (q97 _),
-    "q98_time_travel" -> (q98 _),
-    "q99_trailing_distinct" -> (q99 _),
-    "q100_pagerank" -> (q100 _),
-    "q101_profile" -> (q101 _),
-    "q102_grouping_sets" -> (q102 _),
-    "q103_snapshot_diff" -> (q103 _),
-    "q104_quantized_ann" -> (q104 _),
-    "q105_quality_rules" -> (q105 _),
-    "q106_compact_base" -> (q106 _),
-    "q107_stream_custom_state" -> (q107 _),
-    "q108_custom_udaf" -> (q108 _),
-    "q109_psi_drift" -> (q109 _),
-    "q110_hierarchy_closure" -> (q110 _),
-    "q111_compact_small_files" -> (q111 _),
-    "q112_approx_quantile" -> (q112 _),
-    "q113_schema_evolution" -> (q113 _),
-    "q114_binary_ingest" -> (q114 _),
-    "q115_array_hof" -> (q115 _),
-    "q116_discretize" -> (q116 _),
-    "q117_txlog_lake" -> (q117 _),
-    "q118_incremental_dedup" -> (q118 _),
-    "q119_hll_rollup" -> (q119 _),
-    "q120_erasure_delete" -> (q120 _),
-    "q121_exactly_once_sink" -> (q121 _),
-    "q122_attribution" -> (q122 _),
-    "q123_cooccurrence" -> (q123 _),
-    "q124_robust_outliers" -> (q124 _),
-    "q125_data_skipping" -> (q125 _),
-    "q126_scd2_apply" -> (q126 _),
-    "q127_optimize_vacuum" -> (q127 _),
-    "q128_chi_square" -> (q128 _),
-    "q129_frame_windows" -> (q129 _),
-    "q130_reconcile" -> (q130 _),
-    "q131_growth_accounting" -> (q131 _),
-    "q132_conversion_window" -> (q132 _),
-    "q133_xml_source" -> (q133 _),
-    "q134_image_tiles" -> (q134 _),
-    "q137_job_runner" -> (q137 _),
-    "q136_stream_alerts" -> (q136 _),
-    "q135_stream_update_sessions" -> (q135 _),
-    "q138_seq_packing" -> (q138 _),
-    "q139_repetition" -> (q139 _),
-    "q140_pii_redact" -> (q140 _),
-    "q141_contamination" -> (q141 _),
-    "q143_fuzzy_linkage" -> (q143 _),
-    "q144_incremental_join" -> (q144 _),
-    "q145_txlake_update" -> (q145 _),
-    "q146_txlake_merge" -> (q146 _),
-    "q147_trend_ols" -> (q147 _),
-    "q148_seasonal_anomaly" -> (q148 _),
-    "q149_txlake_branch" -> (q149 _),
-    "q150_ivf_index" -> (q150 _),
-    "q151_footer_stats" -> (q151 _),
-    "q152_leakage_split" -> (q152 _),
-    "q153_txlake_cdf" -> (q153 _),
-    "q154_lsh_index" -> (q154 _),
-    "q155_canonical_dedup" -> (q155 _),
-    "q156_vocab_build" -> (q156 _),
-    "q157_bpe_pairs" -> (q157 _),
-    "q158_url_normalize" -> (q158 _),
-    "q159_temperature_sample" -> (q159 _),
-    "q160_pit_join" -> (q160 _),
-    "q161_partition_evolution" -> (q161 _),
-    "q162_triangles" -> (q162 _),
-    "q163_log_checkpoint" -> (q163 _),
-    "q164_range_layout" -> (q164 _),
-    "q165_stream_cdc_apply" -> (q165 _),
-    "q166_skew_report" -> (q166 _),
-    "q167_ivf_append" -> (q167 _),
-    "q168_checked_commit" -> (q168 _),
-    "q169_cms_merge" -> (q169 _),
-    "q170_containment" -> (q170 _),
-    "q171_stream_full_outer" -> (q171 _),
-    "q172_sql_surface" -> (q172 _),
-    "q173_variant_ingest" -> (q173 _),
-    "q174_pseudonymize" -> (q174 _),
-    "q175_spatial_join" -> (q175 _),
-    "q176_entropy_quality" -> (q176 _),
-    "q177_bitmap_distinct" -> (q177 _),
-    "q178_decayed_score" -> (q178 _),
-    "q179_content_chunks" -> (q179 _),
-    "q180_stream_resume" -> (q180 _),
-    "q181_local_time" -> (q181 _),
-    "q182_multicol_skipping" -> (q182 _),
-    "q183_golden_record" -> (q183 _),
-    "q184_optimize_zorder" -> (q184 _),
-    "q185_stream_cms" -> (q185 _),
-    "q186_tx_catalog" -> (q186 _),
-    "q187_schema_evolution_log" -> (q187 _),
-    "q188_pq_ann" -> (q188 _),
-    "q189_sliding_bitmap" -> (q189 _),
-    "q190_bfs_hops" -> (q190 _),
-    "q191_interpolate" -> (q191 _),
-    "q192_deletion_vectors" -> (q192 _),
-    "q193_scene_cuts" -> (q193 _),
-    "q195_ivf_pq" -> (q195 _),
-    "q196_key_index" -> (q196 _),
-    "q197_bitmap_algebra" -> (q197 _),
-    "q198_reconcile_repair" -> (q198 _),
-    "q199_negative_sample" -> (q199 _),
-    "q200_stream_bitmap" -> (q200 _),
-    "q201_ivm_agg_join" -> (q201 _),
-    "q202_quarantine" -> (q202 _),
-    "q203_topk_aggregator" -> (q203 _),
-    "q204_winsorize" -> (q204 _),
-    "q205_phrase_index" -> (q205 _),
-    "q206_stream_dv_erasure" -> (q206 _),
-    "q207_pq_index" -> (q207 _),
-    "q208_pq_append" -> (q208 _),
-    "q209_hybrid_rrf" -> (q209 _),
-    "q210_set_similarity" -> (q210 _),
-    "q211_line_dedup" -> (q211 _),
-    "q212_log_count" -> (q212 _),
-    "q213_restore" -> (q213 _),
-    "q214_bloom_index" -> (q214 _),
-    "q215_ann_recall" -> (q215 _),
-    "q216_inc_components" -> (q216 _),
-    "q217_k_anonymize" -> (q217 _),
-    "q218_weighted_quantile" -> (q218 _),
-    "q219_stream_components" -> (q219 _),
-    "q220_tokenize" -> (q220 _),
-    "q221_canonical_maintenance" -> (q221 _),
-    "q222_markov_transitions" -> (q222 _),
-    "q223_dynamic_sessions" -> (q223 _),
-    "q224_kcore" -> (q224 _),
-    "q225_mixture_schedule" -> (q225 _),
-    "q226_source_cap" -> (q226 _),
-    "q227_occ_race" -> (q227 _),
-    "q228_stream_topk" -> (q228 _),
-    "q229_energy_segments" -> (q229 _),
-    "q230_epoch_order" -> (q230 _),
-    "q231_bigram_surprisal" -> (q231 _),
-    "q232_global_ids" -> (q232 _),
-    "q233_gap_detect" -> (q233 _),
-    "q234_lag_profile" -> (q234 _),
-    "q235_span_dedup" -> (q235 _),
-    "q236_corpus_drift" -> (q236 _),
-    "q237_phash_dedup" -> (q237 _),
-    "q238_label_prop" -> (q238 _),
-    "q239_hidden_partitioning" -> (q239 _),
-    "q240_bitemporal" -> (q240 _),
-    "q241_lexicon_flags" -> (q241 _),
-    "q242_stream_gap_monitor" -> (q242 _),
-    "q243_sorted_neighborhood" -> (q243 _),
-    "q244_merge_evolve" -> (q244 _),
-    "q245_twap" -> (q245 _),
-    "q246_lake_history" -> (q246 _),
-    "q247_rfm" -> (q247 _),
-    "q248_cusum" -> (q248 _),
-    "q249_kmv_distinct" -> (q249 _),
-    "q250_skyline" -> (q250 _),
-    "q251_systematic_pps" -> (q251 _),
-    "q252_accent_fold" -> (q252 _),
-    "q253_ewma" -> (q253 _),
-    "q254_subtree_rollup" -> (q254 _),
-    "q255_autocorr" -> (q255 _),
-    "q256_mutual_info" -> (q256 _),
-    "q257_merge_cdc" -> (q257 _),
-    "q258_avro_roundtrip" -> (q258 _),
-    "q259_stream_cdc_deletes" -> (q259 _),
-    "q260_kmv_jaccard" -> (q260 _),
-    "q261_holt" -> (q261 _),
-    "q262_oov_rate" -> (q262 _),
-    "q263_wap_publish" -> (q263 _),
-    "q264_exact_split" -> (q264 _),
-    "q265_retention_drop" -> (q265 _),
-    "q266_federated_union" -> (q266 _),
-    "q267_stream_retention" -> (q267 _),
-    "q268_dp_counts" -> (q268 _),
-    "q269_interval_join" -> (q269 _),
-    "q270_shortest_path" -> (q270 _),
-    "q271_feature_hash" -> (q271 _),
-    "q272_decile_lift" -> (q272 _),
-    "q273_topo_layers" -> (q273 _),
-    "q274_json_schema_infer" -> (q274 _),
-    "q275_lexical_diversity" -> (q275 _),
-    "q276_lateness_audit" -> (q276 _),
-    "q277_zipf_fit" -> (q277 _),
-    "q278_lake_clone" -> (q278 _),
-    "q279_seq_trigrams" -> (q279 _),
-    "q280_replace_where" -> (q280 _),
-    "q281_markov_attribution" -> (q281 _),
-    "q282_debounce" -> (q282 _),
-    "q283_ab_ztest" -> (q283 _),
-    "q284_stream_debounce" -> (q284 _),
-    "q285_clustering_coeff" -> (q285 _),
-    "q286_ffill_limit" -> (q286 _),
-    "q287_funnel_latency" -> (q287 _),
-    "q288_calibration_ece" -> (q288 _),
-    "q289_bloom_refresh" -> (q289 _),
-    "q290_majority_reconcile" -> (q290 _),
-    "q291_benford" -> (q291 _),
-    "q292_fd_discovery" -> (q292 _),
-    "q293_rolling_ols" -> (q293 _),
-    "q294_assoc_rules" -> (q294 _),
-    "q295_ks_binned" -> (q295 _),
-    "q296_item_neighbors" -> (q296 _),
-    "q297_bootstrap_ci" -> (q297 _),
-    "q298_column_lineage" -> (q298 _),
-    "q299_bom_explosion" -> (q299 _),
-    "q300_stream_zscore" -> (q300 _),
-    "q301_changepoint" -> (q301 _),
-    "q302_proximity_search" -> (q302 _),
-    "q303_calendar_dim" -> (q303 _),
-    "q304_bot_score" -> (q304 _),
-    "q305_ohlc_bars" -> (q305 _),
-    "q306_two_hop_recs" -> (q306 _),
-    "q307_lineage_sql" -> (q307 _),
-    "q308_tws_profile" -> (q308 _),
-    "q312_tws_timers" -> (q312 _),
-    "q313_tws_ttl" -> (q313 _),
-    "q314_tws_initial" -> (q314 _),
-    "q315_holt_winters" -> (q315 _),
-    "q316_quantile_sketch" -> (q316 _),
-    "q317_lineage_lake" -> (q317 _),
-    "q318_exact_percentile" -> (q318 _),
-    "q319_mann_whitney" -> (q319 _),
-    "q320_theil_sen" -> (q320 _),
-    "q321_kaplan_meier" -> (q321 _),
-    "q322_l_diversity" -> (q322 _),
-    "q323_recursive_sql" -> (q323 _),
-    "q324_target_encoding" -> (q324 _),
-    "q325_woe_iv" -> (q325 _),
-    "q326_stream_quantile_sketch" -> (q326 _),
-    "q327_freshness_audit" -> (q327 _),
-    "q328_embedding_drift" -> (q328 _),
-    "q329_balanced_sample" -> (q329 _),
-    "q330_binary_metrics" -> (q330 _),
-    "q331_lateral_topn" -> (q331 _),
-    "q332_blob_entropy" -> (q332 _),
-    "q333_shapley_attribution" -> (q333 _),
-    "q334_interval_union" -> (q334 _),
-    "q335_spearman" -> (q335 _),
-    "q336_subject_access" -> (q336 _),
-    "q337_late_dimension" -> (q337 _),
-    "q338_gini" -> (q338 _),
-    "q339_abc_classes" -> (q339 _),
-    "q340_dedup_recall" -> (q340 _),
-    "q341_burstiness" -> (q341 _),
-    "q342_ivm_retract" -> (q342 _),
-    "q343_quota_topk" -> (q343 _),
-    "q344_sketch_error" -> (q344 _),
-    "q345_stream_dynamic_sessions" -> (q345 _),
-    "q346_slo_burn" -> (q346 _),
-    "q347_schema_compat" -> (q347 _),
-    "q348_table_fingerprint" -> (q348 _),
-    "q349_stream_interval_union" -> (q349 _),
-    "q350_pipeline_funnel" -> (q350 _),
-    "q351_stream_slo_burn" -> (q351 _),
-    "q352_grouped_quantile_sketch" -> (q352 _),
-    "q353_lttb_downsample" -> (q353 _),
-    "q354_pivot_roundtrip" -> (q354 _),
-    "q355_hilbert_layout" -> (q355 _),
-    "q356_sketch_store" -> (q356 _),
-    "q357_mmr_rerank" -> (q357 _),
-    "q358_optimize_hilbert" -> (q358 _),
-    "q359_stream_sketch_store" -> (q359 _),
-    "q360_crosscorr" -> (q360 _),
-    "q361_holt_backtest" -> (q361 _),
-    "q362_welch_ttest" -> (q362 _),
-    "q363_clamped_balance" -> (q363 _),
-    "q364_prorate_cents" -> (q364 _),
-    "q365_t_closeness" -> (q365 _),
-    "q366_audience_overlap" -> (q366 _),
-    "q367_boruvka_msf" -> (q367 _),
-    "q368_fk_discovery" -> (q368 _),
-    "q369_policy_replay" -> (q369 _),
-    "q370_max_drawdown" -> (q370 _),
-    "q371_ips_eval" -> (q371 _),
-    "q372_adamic_adar" -> (q372 _),
-    "q373_kruskal_wallis" -> (q373 _),
-    "q374_kalman_level" -> (q374 _),
-    "q375_ma_decompose" -> (q375 _),
-    "q376_validity_audit" -> (q376 _),
-    "q377_good_turing" -> (q377 _),
-    "q378_consistent_hash" -> (q378 _),
-    "q379_hll_registers" -> (q379 _),
-    "q380_waterfill" -> (q380 _),
-    "q381_stream_hll" -> (q381 _),
-    "q382_rendezvous_hash" -> (q382 _),
-    "q383_hill_tail" -> (q383 _),
-    "q384_rate_limit" -> (q384 _),
-    "q385_ks_exact" -> (q385 _),
-    "q386_join_fanout" -> (q386 _),
-    "q387_eventually_follows" -> (q387 _),
-    "q388_critical_path" -> (q388 _),
-    "q389_compaction_plan" -> (q389 _),
-    "q390_srm_check" -> (q390 _),
-    "q391_trimmed_mean" -> (q391 _),
-    "q392_sax_symbols" -> (q392 _),
-    "q393_energy_distance" -> (q393 _),
-    "q394_median_ci" -> (q394 _),
-    "q395_cuped" -> (q395 _),
-    "q396_fellegi_sunter" -> (q396 _),
-    "q397_conformal" -> (q397 _),
-    "q398_ams_f2" -> (q398 _),
-    "q399_sliding_hll" -> (q399 _),
-    "q400_dp_median" -> (q400 _),
-    "q401_merkle_diff" -> (q401 _),
-    "q402_stream_merkle" -> (q402 _),
-    "q403_yuen_ttest" -> (q403 _),
-    "q404_mase_backtest" -> (q404 _),
-    "q405_butterflies" -> (q405 _),
-    "q406_isotonic" -> (q406 _),
-    "q407_hits" -> (q407 _),
-    "q408_anova_f" -> (q408 _),
-    "q409_mcnemar" -> (q409 _),
-    "q410_stream_sliding_hll" -> (q410 _),
-    "q411_theil_index" -> (q411 _),
-    "q412_sprt" -> (q412 _),
-    "q413_ktruss" -> (q413 _),
-    "q414_kneser_ney" -> (q414 _),
-    "q415_absorbing_funnel" -> (q415 _),
-    "q416_quantile_norm" -> (q416 _),
-    "q417_stream_srm" -> (q417 _),
-    "q418_phonetic_block" -> (q418 _),
-    "q419_isotonic_pava" -> (q419 _),
-    "q420_bh_fdr" -> (q420 _),
-    "q421_mann_kendall" -> (q421 _),
-    "q422_stream_conformal" -> (q422 _),
-    "q423_textrank" -> (q423 _),
-    "q424_kendall_tau" -> (q424 _),
-    "q425_cramers_v" -> (q425 _),
-    "q426_cochran_armitage" -> (q426 _),
-    "q427_stable_match" -> (q427 _),
-    "q428_brown_forsythe" -> (q428 _),
-    "q429_ljung_box" -> (q429 _),
-    "q430_friedman" -> (q430 _),
-    "q431_ranking_metrics" -> (q431 _),
-    "q432_temperature_mix" -> (q432 _),
-    "q433_stream_welch" -> (q433 _),
-    "q434_rake_keywords" -> (q434 _),
-    "q435_jonckheere" -> (q435 _),
-    "q436_concentration" -> (q436 _),
-    "q437_cochran_q" -> (q437 _),
-    "q438_page_hinkley" -> (q438 _),
-    "q439_seasonal_mk" -> (q439 _),
-    "q440_stream_mk" -> (q440 _),
-    "q441_mood_median" -> (q441 _),
-    "q442_pairwise_welch" -> (q442 _),
-    "q443_mantel_haenszel" -> (q443 _),
-    "q444_cronbach_alpha" -> (q444 _),
-    "q445_mde_report" -> (q445 _),
-    "q446_xmr_chart" -> (q446 _),
-    "q447_cohen_kappa" -> (q447 _),
-    "q448_runs_test" -> (q448 _),
-    "q449_capture_recapture" -> (q449 _),
-    "q450_bland_altman" -> (q450 _),
-    "q451_dup_profile" -> (q451 _),
-    "q452_assortativity" -> (q452 _),
-    "q453_covariate_balance" -> (q453 _),
-    "q454_stream_xmr" -> (q454 _),
-    "q455_jsd_matrix" -> (q455 _),
-    "q456_dispersion" -> (q456 _),
-    "q457_corr_matrix" -> (q457 _),
-    "q458_icc" -> (q458 _),
-    "q459_negbin_fit" -> (q459 _),
-    "q460_entropy_profile" -> (q460 _),
-    "q461_rbo" -> (q461 _),
-    "q462_post_stratify" -> (q462 _),
-    "q463_croston" -> (q463 _),
-    "q464_sbc_classify" -> (q464 _),
-    "q465_pinball" -> (q465 _),
-    "q466_pmi_collocations" -> (q466 _),
-    "q467_truncation_fidelity" -> (q467 _),
-    "q468_position_credits" -> (q468 _),
-    "q469_l_moments" -> (q469 _),
-    "q470_cramer_von_mises" -> (q470 _),
-    "q471_stream_jsd" -> (q471 _),
-    "q472_group_sequential" -> (q472 _),
-    "q473_tukey_fences" -> (q473 _),
-    "q474_recall_sweep" -> (q474 _),
-    "q475_bpe_train" -> (q475 _),
-    "q476_skew_kurtosis" -> (q476 _),
-    "q477_bartlett" -> (q477 _),
-    "q478_anderson_darling" -> (q478 _),
-    "q479_dsir_weights" -> (q479 _),
-    "q480_stream_psi" -> (q480 _),
-    "q481_orphan_gc" -> (q481 _),
-    "q482_gopher_rules" -> (q482 _),
-    "q483_harmonic_centrality" -> (q483 _),
-    "q484_theta_forecast" -> (q484 _),
-    "q485_wilcoxon_signed_rank" -> (q485 _),
-    "q486_stream_benford" -> (q486 _),
-    "q487_hampel_filter" -> (q487 _),
-    "q488_neyman_allocation" -> (q488 _),
-    "q489_cluster_depth" -> (q489 _),
-    "q490_ansari_bradley" -> (q490 _),
-    "q491_top_movers" -> (q491 _),
-    "q492_tokenizer_fertility" -> (q492 _),
-    "q493_bipartite_check" -> (q493 _),
-    "q494_blocking_recall" -> (q494 _),
-    "q495_partial_corr" -> (q495 _),
-    "q496_ratio_delta_z" -> (q496 _),
-    "q497_stream_top_movers" -> (q497 _),
-    "q498_langid_confusion" -> (q498 _),
-    "q499_dunn_posthoc" -> (q499 _),
-    "q500_personalized_pagerank" -> (q500 _),
-    "q501_dominant_period" -> (q501 _),
-    "q502_hte_ztest" -> (q502 _),
-    "q503_expire_snapshots" -> (q503 _),
-    "q504_seasonal_band" -> (q504 _),
-    "q505_rare_collapse" -> (q505 _),
-    "q506_stream_seasonal_band" -> (q506 _),
-    "q507_curve_knee" -> (q507 _),
-    "q508_ess_weights" -> (q508 _),
-    "q509_wilson_funnel" -> (q509 _),
-    "q510_vocab_coverage" -> (q510 _),
-    "q511_stream_ess" -> (q511 _),
-    "q512_holm_bonferroni" -> (q512 _),
-    "q513_log_health" -> (q513 _),
-    "q514_stream_funnel" -> (q514 _),
-    "q515_dedup_threshold_sweep" -> (q515 _),
-    "q516_neyman_draw" -> (q516 _),
-    "q517_stream_vocab_coverage" -> (q517 _),
-    "q518_mw_effect_sizes" -> (q518 _),
-    "q519_rmst" -> (q519 _),
-    "q520_logrank" -> (q520 _),
-    "q521_simpson_reversal" -> (q521 _),
-    "q522_jackknife_ratio" -> (q522 _),
-    "q523_qte" -> (q523 _),
-    "q524_bh_qvalues" -> (q524 _),
-    "q525_cohens_d" -> (q525 _),
-    "q526_stream_qte" -> (q526 _),
-    "q527_repeated_spans" -> (q527 _),
-    "q528_iceberg_export" -> (q528 _),
-    "q529_merge_on_read" -> (q529 _),
-    "q530_stream_repeated_spans" -> (q530 _),
-    "q531_stream_logrank" -> (q531 _),
-    "q532_fleiss_kappa" -> (q532 _),
-    "q533_nelson_aalen" -> (q533 _),
-    "q534_gehan_wilcoxon" -> (q534 _),
-    "q535_heaps_law" -> (q535 _),
-    "q536_rich_club" -> (q536 _),
-    "q537_by_fdr" -> (q537 _),
-    "q538_james_stein" -> (q538 _),
-    "q539_label_noise" -> (q539 _),
-    "q540_stream_james_stein" -> (q540 _),
-    "q541_wasserstein" -> (q541 _),
-    "q542_stream_wasserstein" -> (q542 _),
-    "q543_modularity" -> (q543 _),
-    "q544_theils_u" -> (q544 _),
-    "q545_stream_theils_u" -> (q545 _),
-    "q546_raking" -> (q546 _),
-    "q547_km_greenwood" -> (q547 _),
-    "q548_hodges_lehmann" -> (q548 _),
-    "q549_stream_hodges_lehmann" -> (q549 _),
-    "q550_stream_cuped" -> (q550 _),
-    "q551_strata_att" -> (q551 _),
-    "q552_meta_analysis" -> (q552 _),
-    "q553_stream_strata_att" -> (q553 _),
-    "q554_iceberg_time_travel" -> (q554 _),
-    "q555_stream_trend_ols" -> (q555 _),
-    "q556_tail_dependence" -> (q556 _),
-    "q557_kanon_sweep" -> (q557 _),
-    "q558_uniqueness_risk" -> (q558 _),
-    "q559_lang_mixture" -> (q559 _),
-    "q560_km_cohorts" -> (q560 _),
-    "q561_seasonal_strength" -> (q561 _),
-    "q562_stream_kanon" -> (q562 _),
-    "q563_prop_effects" -> (q563 _),
-    "q564_durbin_watson" -> (q564 _),
-    "q565_categorical_distance" -> (q565 _),
-    "q566_gk_gamma" -> (q566 _),
-    "q567_chao1" -> (q567 _),
-    "q568_hill_numbers" -> (q568 _),
-    "q569_goldfeld_quandt" -> (q569 _),
-    "q570_brier_decomp" -> (q570 _),
-    "q571_cooks_distance" -> (q571 _),
-    "q572_stream_prop_effects" -> (q572 _),
-    "q573_stream_gk_gamma" -> (q573 _),
-    "q574_fisher_exact" -> (q574 _),
-    "q575_incidence_rates" -> (q575 _),
-    "q576_katz_centrality" -> (q576 _),
-    "q577_readability" -> (q577 _),
-    "q578_stuart_maxwell" -> (q578 _),
-    "q579_stream_hill" -> (q579 _),
-    "q580_bowker" -> (q580 _),
-    "q581_weighted_kappa" -> (q581 _),
-    "q582_chow_test" -> (q582 _),
-    "q583_direct_standardization" -> (q583 _),
-    "q584_classifier_suite" -> (q584 _),
-    "q585_stream_bowker" -> (q585 _),
-    "q586_blob_chunk_pairs" -> (q586 _),
-    "q587_stylometry" -> (q587 _),
-    "q588_pacf" -> (q588 _),
-    "q589_gumbel_maxima" -> (q589 _),
-    "q590_life_table" -> (q590 _),
-    "q591_cox_ph" -> (q591 _),
-    "q592_p_chart" -> (q592 _),
-    "q593_anova_effects" -> (q593 _),
-    "q594_price_indices" -> (q594 _),
-    "q595_stream_gumbel" -> (q595 _),
-    "q596_hosmer_lemeshow" -> (q596 _),
-    "q597_poisson_gof" -> (q597 _),
-    "q598_g_test" -> (q598 _),
-    "q599_adjusted_residuals" -> (q599 _),
-    "q600_tost_equivalence" -> (q600 _),
-    "q601_dtw_profiles" -> (q601 _),
-    "q602_circular_stats" -> (q602 _),
-    "q603_stream_tost" -> (q603 _),
-    "q604_haar_energy" -> (q604 _),
-    "q605_mean_excess" -> (q605 _),
-    "q606_kupiec_pof" -> (q606 _),
-    "q607_jarque_bera" -> (q607 _),
-    "q608_overlap_coefficient" -> (q608 _),
-    "q609_record_stats" -> (q609 _),
-    "q610_stream_pchart" -> (q610 _),
-    "q611_theil_u" -> (q611 _),
-    "q612_stream_circular" -> (q612 _),
-    "q613_uniformity_chi2" -> (q613 _),
-    "q614_kpi_bridge" -> (q614 _),
-    "q615_hurst" -> (q615 _),
-    "q616_entropy_rate" -> (q616 _),
-    "q617_stump_split" -> (q617 _),
-    "q618_kendall_w" -> (q618 _),
-    "q619_sample_entropy" -> (q619 _),
-    "q620_stream_kendall_w" -> (q620 _),
-    "q621_disproportionality" -> (q621 _),
-    "q622_breslow_day" -> (q622 _),
-    "q623_stream_dispro" -> (q623 _),
-    "q624_sharpe_sortino" -> (q624 _),
-    "q625_process_capability" -> (q625 _),
-    "q626_lorenz_curve" -> (q626 _),
-    "q627_taylor_law" -> (q627 _),
-    "q628_dickey_fuller" -> (q628 _),
-    "q629_granger" -> (q629 _),
-    "q630_did" -> (q630 _),
-    "q631_mixture_quota" -> (q631 _),
-    "q632_skipgram_pairs" -> (q632 _),
-    "q633_stream_lorenz" -> (q633 _),
-    "q634_seasonal_decomposition" -> (q634 _),
-    "q635_concurrency" -> (q635 _),
-    "q636_stream_concurrency" -> (q636 _),
-    "q637_newey_west" -> (q637 _),
-    "q638_cointegration" -> (q638 _),
-    "q639_lsh_design" -> (q639 _),
-    "q640_platt_scaling" -> (q640 _),
-    "q641_hmm_regimes" -> (q641 _),
-    "q642_ltv_curve" -> (q642 _),
-    "q643_join_audit" -> (q643 _),
-    "q644_stream_ltv" -> (q644 _),
-    "q645_competing_risks" -> (q645 _),
-    "q646_mcf" -> (q646 _),
-    "q647_stream_mcf" -> (q647 _),
-    "q648_price_elasticity" -> (q648 _),
-    "q649_word_burstiness" -> (q649 _),
-    "q650_iv_wald" -> (q650 _),
-    "q651_rdd" -> (q651 _),
-    "q652_mediation" -> (q652 _),
-    "q653_stream_iv" -> (q653 _),
-    "q654_skyline" -> (q654 _),
-    "q655_fixed_effects" -> (q655 _),
-    "q656_oaxaca" -> (q656 _),
-    "q657_yule_walker" -> (q657 _),
-    "q658_diebold_mariano" -> (q658 _),
-    "q659_kmeans" -> (q659 _),
-    "q660_pca" -> (q660 _),
-    "q661_ols3" -> (q661 _),
-    "q662_stream_yule_walker" -> (q662 _),
-    "q663_mahalanobis" -> (q663 _),
-    "q664_decision_stump" -> (q664 _),
-    "q665_lda" -> (q665 _),
-    "q666_silhouette" -> (q666 _),
-    "q667_kmeans_elbow" -> (q667 _),
-    "q668_huber_location" -> (q668 _),
-    "q669_davies_bouldin" -> (q669 _),
-    "q670_zip_fit" -> (q670 _),
-    "q671_ma1_fit" -> (q671 _),
-    "q672_arma11_fit" -> (q672 _),
-    "q673_weibull_fit" -> (q673 _),
-    "q674_eigen_centrality" -> (q674 _),
-    "q675_gazetteer_tag" -> (q675 _),
-    "q676_stream_ma1" -> (q676 _),
-    "q677_combined_tests" -> (q677 _),
-    "q678_newsvendor" -> (q678 _),
-    "q679_atkinson" -> (q679 _),
-    "q680_eb_rates" -> (q680 _),
-    "q681_anderson_darling" -> (q681 _),
-    "q682_erlang_staffing" -> (q682 _),
-    "q683_random_projection" -> (q683 _),
-    "q684_stream_erlang" -> (q684 _),
-    "q685_xyz_classes" -> (q685 _),
-    "q686_gmm_em" -> (q686 _),
-    "q309_star_bucketed" -> (q309 _),
-    "q310_rel_division" -> (q310 _),
-    "q311_share_of_parent" -> (q311 _),
-    "q194_unigram_surprisal" -> (q194 _),
-    "q142_stream_append_sessions" -> (q142 _),
-    "q78_merge_upsert" -> (q78 _),
-    "q79_typed_dataset" -> (q79 _),
-    "q80_bloom_prefilter" -> (q80 _),
-    "q81_zorder_layout" -> (q81 _),
-    "q82_percentile_interp" -> (q82 _),
-    "q86_rag_chunking" -> (q86 _),
-    "q90_corrupt_ingest" -> (q90 _),
-    "q91_prep_pipeline" -> (q91 _),
-    "q87_schema_drift_union" -> (q87 _),
-    "q88_map_roundtrip" -> (q88 _),
-    "q89_null_semantics" -> (q89 _),
-    "q83_corr_moments" -> (q83 _),
-    "q84_minhash_pairs" -> (q84 _),
-    "q85_tfidf" -> (q85 _))
-
-  // ---------------------------------------------------------------- oracles
-
-  private val SUMV = "CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE)"
-
-  // JSD: shared by the batch matrix (q455) and the streaming
-  // hour-profile census store (q471) - counts add, batching invisible
-  private val jsdSql: String =
-    """WITH e AS (SELECT event_type AS k, (epoch_ns(ts) // 1000000000 // 3600) % 24 AS b FROM events), c AS (SELECT k, b, CAST(COUNT(*) AS BIGINT) AS n FROM e GROUP BY 1, 2), t AS (SELECT k, CAST(SUM(n) AS BIGINT) AS t FROM c GROUP BY k), sp AS (SELECT a.k AS ka, b.k AS kb, a.t AS ta, b.t AS tb FROM t a JOIN t b ON a.k < b.k), asd AS (SELECT sp.ka, sp.kb, c.b, c.n AS na FROM sp JOIN c ON c.k = sp.ka), bsd AS (SELECT sp.ka, sp.kb, c.b, c.n AS nb FROM sp JOIN c ON c.k = sp.kb), j AS (SELECT COALESCE(asd.ka, bsd.ka) AS ka, COALESCE(asd.kb, bsd.kb) AS kb, COALESCE(asd.b, bsd.b) AS b, COALESCE(na, 0) AS na, COALESCE(nb, 0) AS nb FROM asd FULL OUTER JOIN bsd ON asd.ka = bsd.ka AND asd.kb = bsd.kb AND asd.b = bsd.b), j2 AS (SELECT j.*, sp.ta, sp.tb FROM j JOIN sp ON j.ka = sp.ka AND j.kb = sp.kb), tm AS (SELECT ka, kb, CASE WHEN na > 0 THEN CAST(round(CAST(na AS DOUBLE) / CAST(ta AS DOUBLE) * ln(2.0 * CAST(CAST(na AS DECIMAL(38,0)) * tb AS DOUBLE) / CAST(CAST(na AS DECIMAL(38,0)) * tb + CAST(nb AS DECIMAL(38,0)) * ta AS DOUBLE)), 9) AS DECIMAL(18,9)) ELSE CAST(0 AS DECIMAL(18,9)) END AS pa, CASE WHEN nb > 0 THEN CAST(round(CAST(nb AS DOUBLE) / CAST(tb AS DOUBLE) * ln(2.0 * CAST(CAST(nb AS DECIMAL(38,0)) * ta AS DOUBLE) / CAST(CAST(nb AS DECIMAL(38,0)) * ta + CAST(na AS DECIMAL(38,0)) * tb AS DOUBLE)), 9) AS DECIMAL(18,9)) ELSE CAST(0 AS DECIMAL(18,9)) END AS pb FROM j2) SELECT ka, kb, round((CAST(SUM(pa) AS DOUBLE) + CAST(SUM(pb) AS DOUBLE)) / 2.0, 6) AS jsd_nats FROM tm GROUP BY 1, 2 ORDER BY ka, kb"""
-
-  // XmR: shared by the batch chart (q446) and the streaming hourly
-  // census store (q454) - cents sums add, batching is invisible
-  private val xmrSql: String =
-    """WITH h AS (SELECT event_type, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS v FROM events GROUP BY 1, 2), mr AS (SELECT event_type, hid, v, abs(v - LAG(v) OVER (PARTITION BY event_type ORDER BY hid)) AS mr FROM h), st AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(v) AS BIGINT) AS s, CAST(SUM(mr) AS BIGINT) AS smr, CAST(COUNT(mr) AS BIGINT) AS nmr FROM mr GROUP BY 1), lim AS (SELECT event_type, n, CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS xbar, CAST(smr AS DOUBLE) / CAST(nmr AS DOUBLE) AS mrbar FROM st WHERE nmr >= 1), l2 AS (SELECT *, xbar + 2.66 * mrbar AS ucl, xbar - 2.66 * mrbar AS lcl FROM lim), j AS (SELECT h.event_type AS k, h.hid, CAST(h.v AS DOUBLE) AS vd, l2.n, l2.xbar, l2.mrbar, l2.ucl, l2.lcl FROM h JOIN l2 ON h.event_type = l2.event_type) SELECT k AS event_type, MAX(n) AS n, round(MAX(xbar), 6) AS xbar, round(MAX(mrbar), 6) AS mr_bar, round(MAX(ucl), 6) AS ucl, round(MAX(lcl), 6) AS lcl, CAST(SUM(CASE WHEN vd > ucl OR vd < lcl THEN 1 ELSE 0 END) AS BIGINT) AS n_violations, MIN(CASE WHEN vd > ucl OR vd < lcl THEN hid END) AS first_violation FROM j GROUP BY k ORDER BY event_type"""
-
-  // Mann-Kendall: shared by the batch screen (q421) and the streaming
-  // daily-census store (q440) - counts add, batching is invisible
-  private val mkSql: String =
-    """WITH b AS (SELECT event_type, (epoch_ns(ts) // 1000000000) // 86400 AS day FROM events), c AS (SELECT event_type, day, CAST(COUNT(*) AS BIGINT) AS cnt FROM b GROUP BY 1, 2), p AS (SELECT a.event_type, CAST(SUM(CASE WHEN b2.cnt > a.cnt THEN 1 WHEN b2.cnt < a.cnt THEN -1 ELSE 0 END) AS BIGINT) AS s FROM c a JOIN c b2 ON a.event_type = b2.event_type AND a.day < b2.day GROUP BY 1), n AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n FROM c GROUP BY 1), tt AS (SELECT event_type, CAST(SUM(tj * (tj - 1) * (2 * tj + 5)) AS BIGINT) AS tsum FROM (SELECT event_type, cnt, CAST(COUNT(*) AS BIGINT) AS tj FROM c GROUP BY 1, 2) GROUP BY 1), v AS (SELECT p.event_type, n.n, p.s, (CAST(n.n AS DOUBLE) * (CAST(n.n AS DOUBLE) - 1.0) * (2.0 * CAST(n.n AS DOUBLE) + 5.0) - CAST(tt.tsum AS DOUBLE)) / 18.0 AS vs FROM p JOIN n USING (event_type) JOIN tt USING (event_type) WHERE n.n >= 3) SELECT event_type, n, s, round(vs, 6) AS var_s, round(CASE WHEN s > 0 THEN (CAST(s AS DOUBLE) - 1.0) / sqrt(vs) WHEN s < 0 THEN (CAST(s AS DOUBLE) + 1.0) / sqrt(vs) ELSE 0.0 END, 6) AS z FROM v ORDER BY event_type"""
-
-  // Welch t: shared by the batch test (q362) and the streaming moment
-  // store (q433) - the store replays the identical sufficient statistic
-  private val welchSql: String =
-    """WITH e AS (SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents, event_type = 'view' AS isa FROM events WHERE event_type IN ('view', 'click')), s AS (SELECT CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS na, CAST(SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS BIGINT) AS nb, SUM(CASE WHEN isa THEN CAST(cents AS DECIMAL(38,0)) ELSE 0 END) AS sa, SUM(CASE WHEN NOT isa THEN CAST(cents AS DECIMAL(38,0)) ELSE 0 END) AS sb, SUM(CASE WHEN isa THEN CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0)) ELSE 0 END) AS saa, SUM(CASE WHEN NOT isa THEN CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0)) ELSE 0 END) AS sbb FROM e), w AS (SELECT na, nb, CAST(sa AS DOUBLE) / CAST(na AS DOUBLE) AS ma, CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE) AS mb, ((CAST(na AS DOUBLE) * CAST(saa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE)) / (CAST(na AS DOUBLE) * (CAST(na AS DOUBLE) - 1.0))) / CAST(na AS DOUBLE) AS sea, ((CAST(nb AS DOUBLE) * CAST(sbb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE)) / (CAST(nb AS DOUBLE) * (CAST(nb AS DOUBLE) - 1.0))) / CAST(nb AS DOUBLE) AS seb FROM s) SELECT na AS n_a, nb AS n_b, round(ma, 6) AS mean_a, round(mb, 6) AS mean_b, round((ma - mb) / sqrt(sea + seb), 6) AS t_stat, round((sea + seb) * (sea + seb) / (sea * sea / (CAST(na AS DOUBLE) - 1.0) + seb * seb / (CAST(nb AS DOUBLE) - 1.0)), 6) AS df_welch FROM w"""
-
-
-  // --- LSH parity helpers: the SAME ±1 plane-weight literals the Spark side
-  // materializes are inlined into the oracle SQL, and the dot product is a
-  // left-to-right list_reduce fold — bit-identical to the VecDot codegen
-  // loop (float→double casts and ±1.0 multiplies are exact, and DuckDB's
-  // first-element seed equals Spark's 0.0+x1). Macros arrive via the
-  // multi-statement prelude; the driver's execute() returns the last
-  // statement's result.
-
-  private def planeArr(p: Int): String =
-    VF.planeWeights(p, 64).map(w => if (w > 0) "1.0" else "-1.0")
-      .mkString("[", ",", "]")
-
-  /** 8-bit LSH band signature expression over `embedding`, planes
-    * [first, first+8) — mirrors `VectorFunctions.lshSignature`.
-    */
-  private def sigExpr(first: Int): String =
-    (0 until 8).map(i =>
-      s"(CASE WHEN pdot(embedding, ${planeArr(first + i)}) >= 0 THEN ${1 << i} ELSE 0 END)")
-      .mkString(" + ")
-
-  private val VEC_MACROS =
-    "CREATE OR REPLACE MACRO pdot(v, w) AS list_reduce(list_transform(range(1, 65), i -> CAST(v[i] AS DOUBLE) * w[i]), (a, b) -> a + b); " +
-      "CREATE OR REPLACE MACRO pcos(a, b) AS pdot(a, b) / (sqrt(pdot(a, a)) * sqrt(pdot(b, b)))"
-
-  // --- portable-hash dedup parity: the XsHash/XsMix xorshift family is
-  // replayed in HUGEINT mod-2^64 arithmetic (validated bit-for-bit against
-  // the reference implementation in tools/proto_dedup_oracle.py). Chained
-  // mix steps go through list_reduce because DuckDB macro expansion is
-  // textual — nesting xstep calls would duplicate the accumulator
-  // expression 8^depth times.
-
-  private def uns(l: Long): String = java.lang.Long.toUnsignedString(l)
-
-  private val HASH_MACROS = Seq(
-    s"CREATE OR REPLACE MACRO u64(x) AS x & CAST('${uns(-1L)}' AS HUGEINT)",
-    "CREATE OR REPLACE MACRO xsa(h) AS xor(h, u64(h << 13))",
-    "CREATE OR REPLACE MACRO xsb(h) AS xor(h, h >> 7)",
-    "CREATE OR REPLACE MACRO xsc(h) AS xor(h, u64(h << 17))",
-    "CREATE OR REPLACE MACRO xstep(h, b) AS xsc(xsb(xsa(xor(h, b))))",
-    "CREATE OR REPLACE MACRO wbytes(w) AS list_transform(range(CAST(octet_length(encode(w)) AS INTEGER)), i -> CAST(strpos('123456789ABCDEF', substr(hex(encode(w)), 2*i+1, 1))*16 + strpos('123456789ABCDEF', substr(hex(encode(w)), 2*i+2, 1)) AS HUGEINT))",
-    s"CREATE OR REPLACE MACRO xshash(w) AS list_reduce(list_prepend(CAST('${uns(graft.operators.Dedup.MixSeed)}' AS HUGEINT), wbytes(w)), (a, b) -> xstep(a, b))",
-    s"CREATE OR REPLACE MACRO tosigned(v) AS CAST(CASE WHEN v >= CAST('${uns(Long.MinValue)}' AS HUGEINT) THEN v - CAST('18446744073709551616' AS HUGEINT) ELSE v END AS BIGINT)",
-    "CREATE OR REPLACE MACRO tounsigned(v) AS u64(CAST(v AS HUGEINT))",
-    "CREATE OR REPLACE MACRO rotl8(x) AS u64(x << 8) | (x >> 56)",
-    "CREATE OR REPLACE MACRO shmix(acc, h) AS xor(rotl8(acc), h)",
-    """CREATE OR REPLACE MACRO docwords(t) AS string_split(regexp_replace(lower(trim(t)), '\s+', ' ', 'g'), ' ')""")
-    .mkString("; ")
-
-  /** The q591 Cox score Σ round(d1 − d·n1·θ/(n0+n1·θ), 1e-9) as an
-    * exact-decimal scalar subquery over the duration census `cen`. */
-  private def coxScoreSql(m: String): String =
-    s"(SELECT SUM(CAST(round(CAST(d1 AS DOUBLE) - CAST(d AS DOUBLE) * " +
-      s"CAST(n1 AS DOUBLE) * ($m) / (CAST(n0 AS DOUBLE) + " +
-      s"CAST(n1 AS DOUBLE) * ($m)), 9) AS DECIMAL(28,9))) FROM cen)"
-
-  /** One R/S point (ln w, ln mean R/S) for the q615 oracle at window
-    * size `w`, read from the `hbase` (k, i, v) CTE. */
-  private def hurstPtsSql(w: Int): String =
-    s"SELECT k, CAST(round(ln(CAST($w AS DOUBLE)), 9) AS DECIMAL(18,9)) AS x, " +
-      s"CAST(round(ln(mrs), 9) AS DECIMAL(18,9)) AS y FROM (" +
-      s"SELECT k, CAST(SUM(rs) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS mrs FROM (" +
-      s"SELECT k, blk, CAST(round((dmax - dmin) / sqrt(vr), 9) AS DECIMAL(28,9)) AS rs, vr FROM (" +
-      s"SELECT k, blk, MAX(CAST(cum AS DOUBLE) - CAST(j AS BIGINT) * (CAST(s1 AS DOUBLE) / $w)) AS dmax, " +
-      s"MIN(CAST(cum AS DOUBLE) - CAST(j AS BIGINT) * (CAST(s1 AS DOUBLE) / $w)) AS dmin, " +
-      s"CAST(MAX(s2) AS DOUBLE) / $w - (CAST(MAX(s1) AS DOUBLE) / $w) * (CAST(MAX(s1) AS DOUBLE) / $w) AS vr FROM (" +
-      s"SELECT k, i // $w AS blk, i, v, COUNT(*) OVER (PARTITION BY k, i // $w) AS cnt, " +
-      s"SUM(v) OVER (PARTITION BY k, i // $w) AS s1, SUM(v * v) OVER (PARTITION BY k, i // $w) AS s2, " +
-      s"SUM(v) OVER (PARTITION BY k, i // $w ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum, " +
-      s"ROW_NUMBER() OVER (PARTITION BY k, i // $w ORDER BY i) AS j FROM hbase) q0 " +
-      s"WHERE cnt = $w GROUP BY k, blk) q1 WHERE vr > 0) q2 GROUP BY k) q3"
-
-  private def padLit(j: Int): String =
-    s"CAST('${uns(0x9e3779b97f4a7c15L * (j + 1))}' AS HUGEINT)"
-
-  private def rotlSql(x: String, r0: Int): String = {
-    val r = ((r0 % 64) + 64) % 64
-    if (r == 0) x else s"(u64(($x) << $r) | (($x) >> ${64 - r}))"
-  }
-
-  /** Mirrors Dedup.perm: rotl(h, (13i+7)%64) xor C_i. */
-  private def permSql(s: String, i: Int): String = {
-    val c = i * 0x9e3779b97f4a7c15L + 0x2545f4914f6cdd1dL
-    s"xor(${rotlSql(s, (13 * i + 7) % 64)}, CAST('${uns(c)}' AS HUGEINT))"
-  }
-
-  /** 32 minhash values (signed, min over shingles) as a list expression. */
-  /** One unrolled Platt Newton step: census grid terms under p{k-1}'s
-    * (a, b), decimal-summed, closed-form 2x2 solve, re-pinned params. */
-  /** Shared k-means CTE prefix (census → slice-median init → 3 Lloyd
-    * rounds → final assignment) for the q659/q666/q669 oracles. */
-  private def kmeansPrefixSql: String =
-    s"""cen AS MATERIALIZED (SELECT CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS n FROM customer GROUP BY 1), tot AS (SELECT CAST(SUM(n) AS BIGINT) AS nt FROM cen), cum AS MATERIALIZED (SELECT v, n, SUM(n) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM cen), cn0 AS MATERIALIZED (SELECT j, CAST((SELECT MIN(v) FROM cum WHERE cum >= ((2 * j + 1) * (SELECT nt FROM tot)) // 8 + 1) AS DOUBLE) AS c FROM (SELECT UNNEST([0, 1, 2, 3]) AS j)), ${(1 to 3).map(kmeansIterSql).mkString(", ")}, asgf AS MATERIALIZED (SELECT v, n, j AS cluster, c FROM (SELECT cen.v, cen.n, cc.j, cc.c, ROW_NUMBER() OVER (PARTITION BY cen.v ORDER BY abs(CAST(cen.v AS DOUBLE) - cc.c), cc.j) AS rk FROM cen CROSS JOIN cn3 cc) WHERE rk = 1)"""
-
-  /** One Lloyd round of the k-parametrized elbow sweep (CTE names
-    * suffixed _k<k>; shares the cen/tot/cum prefix). */
-  private def kmeansIterSqlK(i: Int, k: Int): String = {
-    val prev = s"cn${i - 1}_k$k"
-    s"""asg${i}_k$k AS MATERIALIZED (SELECT v, n, j AS cluster FROM (SELECT cen.v, cen.n, cc.j, ROW_NUMBER() OVER (PARTITION BY cen.v ORDER BY abs(CAST(cen.v AS DOUBLE) - cc.c), cc.j) AS rk FROM cen CROSS JOIN $prev cc) WHERE rk = 1), upd${i}_k$k AS (SELECT cluster AS j, round(CAST(SUM(CAST(v * n AS DECIMAL(38,0))) AS DOUBLE) / CAST(SUM(CAST(n AS DECIMAL(38,0))) AS DOUBLE), 9) AS c FROM asg${i}_k$k GROUP BY 1), cn${i}_k$k AS MATERIALIZED (SELECT p.j, COALESCE(u.c, p.c) AS c FROM $prev p LEFT JOIN upd${i}_k$k u ON u.j = p.j)"""
-  }
-
-  /** Full Lloyd chain + WSS for one k of the elbow sweep. */
-  private def kmeansChainSqlK(k: Int): String = {
-    val js = (0 until k).mkString(", ")
-    s"""cn0_k$k AS MATERIALIZED (SELECT j, CAST((SELECT MIN(v) FROM cum WHERE cum >= ((2 * j + 1) * (SELECT nt FROM tot)) // ${2 * k} + 1) AS DOUBLE) AS c FROM (SELECT UNNEST([$js]) AS j)), ${(1 to 3).map(kmeansIterSqlK(_, k)).mkString(", ")}, asgf_k$k AS (SELECT v, n, j AS cluster, c FROM (SELECT cen.v, cen.n, cc.j, cc.c, ROW_NUMBER() OVER (PARTITION BY cen.v ORDER BY abs(CAST(cen.v AS DOUBLE) - cc.c), cc.j) AS rk FROM cen CROSS JOIN cn3_k$k cc) WHERE rk = 1), wss_k$k AS (SELECT $k AS k, CAST(SUM(CAST(v * 1000000000 - CAST(round(c * 1e9, 0) AS BIGINT) AS HUGEINT) * CAST(v * 1000000000 - CAST(round(c * 1e9, 0) AS BIGINT) AS HUGEINT) * CAST(n AS HUGEINT)) AS DOUBLE) / 1e18 AS wss FROM asgf_k$k)"""
-  }
-
-  /** One Lloyd round: assignment (nearest centroid, smallest-index tie)
-    * over the value census, exact-decimal centroid update pinned at
-    * 1e-9, emptied clusters keep their previous centroid. */
-  private def kmeansIterSql(i: Int): String = {
-    val prev = s"cn${i - 1}"
-    s"""asg$i AS MATERIALIZED (SELECT v, n, j AS cluster FROM (SELECT cen.v, cen.n, cc.j, ROW_NUMBER() OVER (PARTITION BY cen.v ORDER BY abs(CAST(cen.v AS DOUBLE) - cc.c), cc.j) AS rk FROM cen CROSS JOIN $prev cc) WHERE rk = 1), upd$i AS (SELECT cluster AS j, round(CAST(SUM(CAST(v * n AS DECIMAL(38,0))) AS DOUBLE) / CAST(SUM(CAST(n AS DECIMAL(38,0))) AS DOUBLE), 9) AS c FROM asg$i GROUP BY 1), cn$i AS MATERIALIZED (SELECT p.j, COALESCE(u.c, p.c) AS c FROM $prev p LEFT JOIN upd$i u ON u.j = p.j)"""
-  }
-
-  /** One Huber IRLS round: ψ-weight as the only pinned double (12
-    * decimals), exact-decimal weighted sums, μ re-pinned at 1e-9; a
-    * zero MAD leaves μ untouched (the engine reports the median). */
-  private def huberIterSql(i: Int): String = {
-    val w = "CAST(CASE WHEN abs(CAST(v AS DOUBLE) - p.mu) <= p.c THEN 1.0 ELSE round(p.c / abs(CAST(v AS DOUBLE) - p.mu), 12) END AS DECIMAL(13,12))"
-    s"""hu$i AS MATERIALIZED (SELECT p.med AS med, p.mad AS mad, p.c AS c, CASE WHEN p.mad > 0 THEN round(CAST(SUM($w * CAST(v * n AS DECIMAL(20,0))) AS DOUBLE) / CAST(SUM($w * CAST(n AS DECIMAL(19,0))) AS DOUBLE), 9) ELSE p.mu END AS mu FROM hcen, hu${i - 1} p GROUP BY p.med, p.mad, p.c, p.mu)"""
-  }
-
-  private def plattIterSql(k: Int): String = {
-    val prev = s"pp${k - 1}"
-    s"""gt$k AS MATERIALIZED (SELECT it, a, b, SUM(CAST(round(CAST(pos AS DOUBLE) - CAST(n AS DOUBLE) * round(1.0 / (1.0 + exp(-round(a + b * CAST(s AS DOUBLE), 9))), 12), 9) AS DECIMAL(28,9))) AS g1, SUM(CAST(round(CAST(s AS DOUBLE) * (CAST(pos AS DOUBLE) - CAST(n AS DOUBLE) * round(1.0 / (1.0 + exp(-round(a + b * CAST(s AS DOUBLE), 9))), 12)), 9) AS DECIMAL(28,9))) AS g2, SUM(CAST(round(CAST(n AS DOUBLE) * round(1.0 / (1.0 + exp(-round(a + b * CAST(s AS DOUBLE), 9))), 12) * (1.0 - round(1.0 / (1.0 + exp(-round(a + b * CAST(s AS DOUBLE), 9))), 12)), 9) AS DECIMAL(28,9))) AS h11, SUM(CAST(round(CAST(s AS DOUBLE) * (CAST(n AS DOUBLE) * round(1.0 / (1.0 + exp(-round(a + b * CAST(s AS DOUBLE), 9))), 12) * (1.0 - round(1.0 / (1.0 + exp(-round(a + b * CAST(s AS DOUBLE), 9))), 12))), 9) AS DECIMAL(28,9))) AS h12, SUM(CAST(round(CAST(s AS DOUBLE) * CAST(s AS DOUBLE) * (CAST(n AS DOUBLE) * round(1.0 / (1.0 + exp(-round(a + b * CAST(s AS DOUBLE), 9))), 12) * (1.0 - round(1.0 / (1.0 + exp(-round(a + b * CAST(s AS DOUBLE), 9))), 12))), 9) AS DECIMAL(28,9))) AS h22 FROM pcen CROSS JOIN $prev GROUP BY 1, 2, 3), pp$k AS MATERIALIZED (SELECT it + CASE WHEN CAST(h11 AS DOUBLE) * CAST(h22 AS DOUBLE) - CAST(h12 AS DOUBLE) * CAST(h12 AS DOUBLE) > 1e-12 THEN 1 ELSE 0 END AS it, CASE WHEN CAST(h11 AS DOUBLE) * CAST(h22 AS DOUBLE) - CAST(h12 AS DOUBLE) * CAST(h12 AS DOUBLE) > 1e-12 THEN round(a + (CAST(h22 AS DOUBLE) * CAST(g1 AS DOUBLE) - CAST(h12 AS DOUBLE) * CAST(g2 AS DOUBLE)) / (CAST(h11 AS DOUBLE) * CAST(h22 AS DOUBLE) - CAST(h12 AS DOUBLE) * CAST(h12 AS DOUBLE)), 9) ELSE a END AS a, CASE WHEN CAST(h11 AS DOUBLE) * CAST(h22 AS DOUBLE) - CAST(h12 AS DOUBLE) * CAST(h12 AS DOUBLE) > 1e-12 THEN round(b + (CAST(h11 AS DOUBLE) * CAST(g2 AS DOUBLE) - CAST(h12 AS DOUBLE) * CAST(g1 AS DOUBLE)) / (CAST(h11 AS DOUBLE) * CAST(h22 AS DOUBLE) - CAST(h12 AS DOUBLE) * CAST(h12 AS DOUBLE)), 9) ELSE b END AS b FROM gt$k)"""
-  }
-
-  private def sigSql: String =
-    (0 until 32).map(i =>
-      s"list_min(list_transform(sh, s -> tosigned(${permSql("s", i)})))")
-      .mkString("[", ", ", "]")
-
-  /** Band b's key: xorshift fold of 4 signature slots + band index. */
-  private def bandSql(b: Int): String = {
-    val vals = (0 until 4).map(r => s"tounsigned(sig[${b * 4 + r + 1}])").mkString(", ")
-    s"list_reduce(list_prepend(CAST('${uns(graft.operators.Dedup.MixSeed)}' AS HUGEINT), [$vals, CAST($b AS HUGEINT)]), (a, x) -> xstep(a, x))"
-  }
-
-  /** 64-bit simhash (unsigned HUGEINT) from the word-hash list `h` and
-    * word count `n` — bit j set iff 2*ones_j >= n, like Dedup.simhashes.
-    */
-  private def simhashSqlExpr: String =
-    (0 until 64).map(j =>
-      s"(CASE WHEN 2 * len(list_filter(h, x -> (x >> $j) & 1 = 1)) >= n THEN CAST('${uns(1L << j)}' AS HUGEINT) ELSE CAST(0 AS HUGEINT) END)")
-      .mkString("(", " + ", ")")
-
-  /** q109 AND q480 (the streaming PSI store shares it verbatim): global
-    * min/max bins, Laplace-smoothed shares, per-bin PSI terms.
-    */
-  private val psiDriftOracleSql: String =
-    """WITH ev AS (SELECT value, strftime(ts, '%Y-%m-%d') AS date_id FROM events), mxd AS (SELECT MAX(date_id) AS d FROM ev), b AS (SELECT MIN(value) AS mn, MAX(value) AS mx FROM ev), c AS (SELECT CAST(least(floor((value - mn) * 10.0 / (mx - mn)), 9) AS BIGINT) AS bin, CAST(SUM(CASE WHEN date_id = (SELECT d FROM mxd) THEN 1 ELSE 0 END) AS BIGINT) AS n_act, CAST(SUM(CASE WHEN date_id = (SELECT d FROM mxd) THEN 0 ELSE 1 END) AS BIGINT) AS n_ref FROM ev, b GROUP BY 1), t AS (SELECT CAST(SUM(n_act) AS BIGINT) AS t_act, CAST(SUM(n_ref) AS BIGINT) AS t_ref FROM c), p AS (SELECT bin, n_ref, n_act, (CAST(n_ref AS DOUBLE) + 1.0) / CAST(t_ref + 10 AS DOUBLE) AS p_r, (CAST(n_act AS DOUBLE) + 1.0) / CAST(t_act + 10 AS DOUBLE) AS p_a FROM c, t) SELECT bin, n_ref, n_act, round(p_r, 6) AS p_reference, round(p_a, 6) AS p_actual, round((p_a - p_r) * ln(p_a / p_r), 6) AS psi_term FROM p ORDER BY bin"""
-
-  /** q491 AND q497 (the streaming top-movers store shares it verbatim):
-    * pinned midpoint cutoff, per-key period census, (|Δ| desc, key asc)
-    * rank filter.
-    */
-  private val topMoversOracleSql: String =
-    """WITH ev AS (SELECT user_id, epoch_ns(ts)//1000000000 AS sec FROM events), cut AS (SELECT (MIN(sec) + MAX(sec)) // 2 AS c FROM ev), cen AS (SELECT user_id AS key, CAST(SUM(CASE WHEN sec >= (SELECT c FROM cut) THEN 0 ELSE 1 END) AS BIGINT) AS n_prev, CAST(SUM(CASE WHEN sec >= (SELECT c FROM cut) THEN 1 ELSE 0 END) AS BIGINT) AS n_curr FROM ev GROUP BY 1), d AS (SELECT key, n_prev, n_curr, n_curr - n_prev AS delta FROM cen), r AS (SELECT key, n_prev, n_curr, delta, CAST(ROW_NUMBER() OVER (ORDER BY abs(delta) DESC, key) AS BIGINT) AS rank FROM d) SELECT rank, key, n_prev, n_curr, delta FROM r WHERE rank <= 10 ORDER BY rank"""
-
-  /** q501 replay: the q255 per-lag LEAD census for every lag 2..24,
-    * grid-rounded ACF, (acf desc, lag asc) argmax per key.
-    */
-  private def dominantPeriodOracleSql: String = {
-    val lagUnions = (2 to 24).map(l =>
-      s"SELECT event_type, hid, v, lead(v, $l) OVER (PARTITION BY event_type ORDER BY hid) AS w, CAST($l AS BIGINT) AS lag FROM h")
-      .mkString(" UNION ALL ")
-    s"""WITH h AS (SELECT event_type, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS v FROM events GROUP BY 1, 2), l AS (SELECT event_type, lag, v AS x, w FROM ($lagUnions) WHERE w IS NOT NULL), a AS (SELECT event_type, lag, COUNT(*) AS n, SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(w AS DECIMAL(38,0))) AS sy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))) AS sxx, SUM(CAST(w AS DECIMAL(38,0)) * CAST(w AS DECIMAL(38,0))) AS syy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(w AS DECIMAL(38,0))) AS sxy FROM l GROUP BY 1, 2), acf AS (SELECT event_type, lag, n, round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) AS acf FROM a WHERE n >= 3), f AS (SELECT event_type, lag, n, acf, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY acf DESC, lag) AS rk, COUNT(*) OVER (PARTITION BY event_type) AS n_lags FROM acf WHERE acf IS NOT NULL) SELECT event_type, lag AS period, acf AS strength, n AS n_pairs, CAST(n_lags AS BIGINT) AS n_lags FROM f WHERE rk = 1 ORDER BY event_type"""
-  }
-
-  /** q510 AND q517 (the streaming vocab store shares it verbatim):
-    * token census + distributed top-K cut, per-K coverage.
-    */
-  private val vocabCoverageOracleSql: String =
-    """WITH w0 AS (SELECT unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w FROM documents), wf AS (SELECT w, COUNT(*) AS n FROM w0 WHERE w <> '' GROUP BY 1), t AS (SELECT CAST(SUM(n) AS BIGINT) AS total_tokens FROM wf), r AS (SELECT w, n, CAST(ROW_NUMBER() OVER (ORDER BY n DESC, w) AS BIGINT) AS rk FROM wf), c AS (SELECT rk, CAST(SUM(n) OVER (ORDER BY rk ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cumn FROM r), u AS (SELECT CAST(256 AS BIGINT) AS k UNION ALL SELECT 1024 UNION ALL SELECT 4096) SELECT u.k, MAX(c.rk) AS vocab_used, MAX(c.cumn) AS top_tokens, t.total_tokens, round(CAST(MAX(c.cumn) AS DOUBLE) / CAST(t.total_tokens AS DOUBLE), 6) AS coverage FROM u JOIN c ON c.rk <= u.k CROSS JOIN t GROUP BY u.k, t.total_tokens ORDER BY u.k"""
-
-  /** q523 AND q526 (the streaming QTE store shares it verbatim):
-    * per-arm ceiling-rank order stats from the value census.
-    */
-  private val qteOracleSql: String =
-    """WITH e AS (SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v, CAST(concat('0x', substr(md5(concat('qte1:', CAST(user_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 = 0 AS isa FROM events), cen AS (SELECT isa, v, COUNT(*) AS t FROM e GROUP BY 1, 2), cc AS (SELECT isa, v, SUM(t) OVER (PARTITION BY isa ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c, SUM(t) OVER (PARTITION BY isa) AS n FROM cen), pa AS (SELECT isa, CAST(MAX(n) AS BIGINT) AS n, MIN(CASE WHEN c >= (25 * n + 99) // 100 THEN v END) AS p25, MIN(CASE WHEN c >= (50 * n + 99) // 100 THEN v END) AS p50, MIN(CASE WHEN c >= (75 * n + 99) // 100 THEN v END) AS p75, MIN(CASE WHEN c >= (90 * n + 99) // 100 THEN v END) AS p90 FROM cc GROUP BY 1), u AS (SELECT unnest([25, 50, 75, 90]) AS pct) SELECT CAST(u.pct AS BIGINT) AS pct, a.n AS n_a, b.n AS n_b, CASE u.pct WHEN 25 THEN a.p25 WHEN 50 THEN a.p50 WHEN 75 THEN a.p75 ELSE a.p90 END AS q_a, CASE u.pct WHEN 25 THEN b.p25 WHEN 50 THEN b.p50 WHEN 75 THEN b.p75 ELSE b.p90 END AS q_b, (CASE u.pct WHEN 25 THEN a.p25 WHEN 50 THEN a.p50 WHEN 75 THEN a.p75 ELSE a.p90 END) - (CASE u.pct WHEN 25 THEN b.p25 WHEN 50 THEN b.p50 WHEN 75 THEN b.p75 ELSE b.p90 END) AS qte FROM u, (SELECT * FROM pa WHERE isa) a, (SELECT * FROM pa WHERE NOT isa) b ORDER BY pct"""
-
-  /** q509 AND q514 (the streaming funnel store shares it verbatim):
-    * monotone prefix counts + runtime Wilson terms, z pinned 1.96.
-    */
-  private val wilsonFunnelOracleSql: String =
-    """WITH f AS (SELECT user_id, BOOL_OR(event_type = 'view') AS v, BOOL_OR(event_type = 'click') AS c, BOOL_OR(event_type = 'purchase') AS p FROM events GROUP BY 1), g AS (SELECT CAST(SUM(CASE WHEN v THEN 1 ELSE 0 END) AS BIGINT) AS c1, CAST(SUM(CASE WHEN v AND c THEN 1 ELSE 0 END) AS BIGINT) AS c2, CAST(SUM(CASE WHEN v AND c AND p THEN 1 ELSE 0 END) AS BIGINT) AS c3 FROM f), s AS (SELECT 'view->click' AS step, c1 AS trials, c2 AS successes FROM g UNION ALL SELECT 'click->purchase', c2, c3 FROM g), w AS (SELECT step, trials, successes, CAST(trials AS DOUBLE) AS n, CAST(successes AS DOUBLE) / CAST(trials AS DOUBLE) AS p FROM s) SELECT step, trials, successes, CASE WHEN trials > 0 THEN round(p, 6) END AS rate, CASE WHEN trials > 0 THEN round((p + 1.96 * 1.96 / (2.0 * n)) / (1.0 + 1.96 * 1.96 / n) - 1.96 * sqrt(p * (1.0 - p) / n + 1.96 * 1.96 / (4.0 * n * n)) / (1.0 + 1.96 * 1.96 / n), 6) END AS lo, CASE WHEN trials > 0 THEN round((p + 1.96 * 1.96 / (2.0 * n)) / (1.0 + 1.96 * 1.96 / n) + 1.96 * sqrt(p * (1.0 - p) / n + 1.96 * 1.96 / (4.0 * n * n)) / (1.0 + 1.96 * 1.96 / n), 6) END AS hi FROM w ORDER BY step"""
-
-  /** q504 AND q506 (the streaming seasonal-band store shares it
-    * verbatim): slot-value census order stats with ceiling ranks, pinned
-    * newest-day probe.
-    */
-  private val seasonalBandOracleSql: String =
-    """WITH sl AS (SELECT event_type, strftime(ts, '%Y-%m-%d') AS d, (epoch_ns(ts)//1000000000//3600) % 24 AS hod, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents FROM events GROUP BY 1, 2, 3), mx AS (SELECT MAX(d) AS dmax FROM sl), cen AS (SELECT event_type AS k, hod AS slot, cents AS v, COUNT(*) AS t FROM sl GROUP BY 1, 2, 3), cc AS (SELECT k, slot, v, SUM(t) OVER (PARTITION BY k, slot ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c, SUM(t) OVER (PARTITION BY k, slot) AS n FROM cen), bd AS (SELECT k, slot, CAST(MAX(n) AS BIGINT) AS n_days, MIN(CASE WHEN c >= (1 * n + 9) // 10 THEN v END) AS p10, MIN(CASE WHEN c >= (5 * n + 9) // 10 THEN v END) AS p50, MIN(CASE WHEN c >= (9 * n + 9) // 10 THEN v END) AS p90 FROM cc GROUP BY 1, 2), lv AS (SELECT event_type AS k, hod AS slot, cents AS latest_v FROM sl, mx WHERE d = mx.dmax) SELECT bd.k, bd.slot, bd.n_days, bd.p10, bd.p50, bd.p90, lv.latest_v, CASE WHEN lv.latest_v IS NOT NULL THEN lv.latest_v < bd.p10 OR lv.latest_v > bd.p90 END AS breach FROM bd LEFT JOIN lv ON bd.k = lv.k AND bd.slot = lv.slot ORDER BY bd.k, bd.slot"""
-
-  /** q493 replay: the encoded-state (root·64 + dist) min-propagation
-    * unrolled 8 rounds over the synthetic cycle lattice; the bipartite
-    * verdict is the same-parity edge census per component root.
-    */
-  private def bipartiteOracleSql: String = {
-    val rounds = (1 to 8).map { r =>
-      s"s$r AS MATERIALIZED (SELECT s.node, LEAST(s.st, COALESCE(MIN(t.st + 1), s.st)) AS st " +
-        s"FROM s${r - 1} s LEFT JOIN sym ON sym.u = s.node " +
-        s"LEFT JOIN s${r - 1} t ON t.node = sym.v GROUP BY s.node, s.st)"
-    }.mkString(", ")
-    "WITH ks AS (SELECT CAST(p_partkey AS BIGINT) - 1 AS k0 FROM part WHERE p_partkey <= 480), " +
-      "gi AS (SELECT k0 // 8 AS g, k0 % 8 AS i FROM ks), " +
-      "gc AS (SELECT g, i, CASE WHEN g % 2 = 0 THEN 5 ELSE 6 END AS c FROM gi), " +
-      "e1 AS (SELECT g * 8 + i AS src, g * 8 + ((i + 1) % c) AS dst FROM gc WHERE i < c), " +
-      "und AS (SELECT DISTINCT LEAST(src, dst) AS a, GREATEST(src, dst) AS b FROM e1 WHERE src <> dst), " +
-      "sym AS (SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und), " +
-      "n0 AS (SELECT DISTINCT u AS node FROM sym), " +
-      "s0 AS (SELECT node, node * 64 AS st FROM n0), " + rounds + ", " +
-      "lab AS (SELECT node, st // 64 AS root, (st % 64) % 2 AS par FROM s8), " +
-      "ej AS (SELECT la.root AS root, la.par AS pa, lb.par AS pb FROM und " +
-      "JOIN lab la ON la.node = und.a JOIN lab lb ON lb.node = und.b), " +
-      "cn AS (SELECT root, COUNT(*) AS n_nodes FROM lab GROUP BY 1), " +
-      "ce AS (SELECT root, COUNT(*) AS n_edges, CAST(SUM(CASE WHEN pa = pb THEN 1 ELSE 0 END) AS BIGINT) AS odd_edges FROM ej GROUP BY 1) " +
-      "SELECT cn.root, cn.n_nodes, COALESCE(ce.n_edges, 0) AS n_edges, " +
-      "COALESCE(ce.odd_edges, 0) AS odd_edges, COALESCE(ce.odd_edges, 0) = 0 AS is_bipartite " +
-      "FROM cn LEFT JOIN ce ON cn.root = ce.root ORDER BY cn.root"
-  }
-
-  /** q475 replay: the 8-round BPE trainer unrolled — per round a pair
-    * census over the delimited symbol strings, a LIMIT-1 argmax
-    * (total desc, lft, rgt — the engine's total order) and the literal
-    * greedy replace; `replace` is non-overlapping left-to-right in both
-    * engines, which IS the BPE scan rule.
-    */
-  private def bpeTrainOracleSql(merges: Int): String = {
-    val round = (1 to merges).map { k =>
-      val prev = s"s${k - 1}"
-      s"p$k AS MATERIALIZED (SELECT t[i] AS lft, t[i+1] AS rgt, CAST(SUM(cnt) AS BIGINT) AS total FROM (SELECT cnt, list_filter(string_split_regex(seq, '[\\x1E\\x1F]'), x9 -> x9 <> '') AS t FROM $prev), LATERAL (SELECT unnest(range(1, len(t))) AS i) u GROUP BY 1, 2), " +
-        s"m$k AS MATERIALIZED (SELECT lft, rgt, total FROM p$k ORDER BY total DESC, lft, rgt LIMIT 1), " +
-        s"s$k AS MATERIALIZED (SELECT w, cnt, replace(seq, chr(31) || m.lft || chr(30) || chr(31) || m.rgt || chr(30), chr(31) || m.lft || m.rgt || chr(30)) AS seq FROM $prev, m$k m)"
-    }.mkString(", ")
-    val out = (1 to merges).map(k =>
-      s"SELECT CAST($k AS BIGINT) AS rank, lft, rgt, lft || rgt AS merged, total FROM m$k")
-      .mkString(" UNION ALL ")
-    "WITH wc AS MATERIALIZED (SELECT w, CAST(COUNT(*) AS BIGINT) AS cnt FROM (SELECT unnest(string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ')) AS w FROM documents) WHERE w <> '' GROUP BY w), " +
-      "s0 AS MATERIALIZED (SELECT w, cnt, list_reduce(list_prepend('', list_transform(range(1, length(w) + 1), i8 -> chr(31) || substr(w, CAST(i8 AS INTEGER), 1) || chr(30))), (a8, b8) -> a8 || b8) AS seq FROM wc), " +
-      s"$round $out ORDER BY rank"
-  }
-
-  /** q474 replay: exact top-10 (q26), 2-band LSH top-10 (q215's ap),
-    * the full 2-iteration k-means + cells (q40), one probe-ranked
-    * retrieval per nProbe level, then a per-method recall readout —
-    * every number in the sweep table is hash-exact.
-    */
-  private def recallSweepOracleSql: String = {
-    def probeCtes(p: Int) =
-      s"cand$p AS (SELECT DISTINCT pr.qid, s2.vec_id AS nid FROM (SELECT qid, cid FROM qsim WHERE rnk <= $p) pr JOIN cells s2 ON pr.cid = s2.cid WHERE s2.vec_id <> pr.qid), " +
-        s"sc$p AS (SELECT c.qid, c.nid, round(pcos(qe.embedding, ne.embedding), 4) AS cos_r FROM cand$p c JOIN embeddings qe ON qe.vec_id = c.qid JOIN embeddings ne ON ne.vec_id = c.nid), " +
-        s"ap$p AS (SELECT qid, nid FROM (SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_r DESC NULLS LAST, nid) AS rnk FROM sc$p) WHERE rnk <= 10)"
-    def readout(method: String, ap: String) =
-      s"SELECT '$method' AS method, CAST(COUNT(*) AS BIGINT) AS n_queries, CAST(SUM(n_exact) AS BIGINT) AS n_exact, CAST(SUM(n_hit) AS BIGINT) AS n_hit, round(CAST(SUM(n_hit) AS DOUBLE) / CAST(SUM(n_exact) AS DOUBLE), 6) AS recall FROM (SELECT ex.qid, COUNT(*) AS n_exact, COUNT($ap.nid) AS n_hit FROM ex LEFT JOIN $ap ON ex.qid = $ap.qid AND ex.nid = $ap.nid GROUP BY ex.qid)"
-    s"$VEC_MACROS; WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 10), " +
-      "s AS (SELECT q.qid, e.vec_id AS nid, list_cosine_similarity(q.qv, e.embedding) AS cos FROM q CROSS JOIN embeddings e WHERE e.vec_id <> q.qid), " +
-      "ex AS (SELECT qid, nid FROM (SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rnk FROM s) WHERE rnk <= 10), " +
-      s"sigs AS (SELECT vec_id, embedding, ${sigExpr(0)} AS b0, ${sigExpr(8)} AS b1 FROM embeddings), " +
-      "candl AS (SELECT DISTINCT qc.vec_id AS qid, e.vec_id AS nid, round(pcos(qc.embedding, e.embedding), 4) AS cos_r FROM sigs qc JOIN sigs e ON (qc.b0 = e.b0 OR qc.b1 = e.b1) AND qc.vec_id <> e.vec_id WHERE qc.vec_id < 10), " +
-      "apl AS (SELECT qid, nid FROM (SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_r DESC NULLS LAST, nid) AS rnk FROM candl) WHERE rnk <= 10), " +
-      "c0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)), " +
-      s"a1 AS (${ivfAssignSql("c0")}), c1 AS (${ivfRecomputeSql("c0", "a1")}), " +
-      s"a2 AS (${ivfAssignSql("c1")}), c2 AS (${ivfRecomputeSql("c1", "a2")}), " +
-      s"cells AS (${ivfAssignSql("c2")}), " +
-      "qsim AS (SELECT qq.vec_id AS qid, c.cid, ROW_NUMBER() OVER (PARTITION BY qq.vec_id ORDER BY pcos(qq.embedding, c.cvec) DESC NULLS LAST, c.cid) AS rnk FROM embeddings qq CROSS JOIN c2 c WHERE qq.vec_id < 10), " +
-      s"${probeCtes(1)}, ${probeCtes(2)}, ${probeCtes(4)} " +
-      s"${readout("lsh_2band", "apl")} UNION ALL ${readout("ivf_p01", "ap1")} UNION ALL ${readout("ivf_p02", "ap2")} UNION ALL ${readout("ivf_p04", "ap4")} ORDER BY method"
-  }
-
-  /** Nearest-centroid assignment for the q40/q167 oracles (C = centroid
-    * CTE; `where` restricts the assigned corpus, e.g. to the index's base
-    * set).
-    */
-  private def ivfAssignSql(c: String, where: String = ""): String =
-    s"""SELECT vec_id, cid FROM (SELECT e.vec_id, c.cid, ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY pcos(e.embedding, c.cvec) DESC NULLS LAST, c.cid) AS rnk FROM (SELECT vec_id, embedding FROM embeddings $where) e CROSS JOIN $c c) WHERE rnk = 1"""
-
-  /** Lloyd recompute for the q40 oracle: decimal-exact per-position means
-    * (the same DECIMAL(30,12) sum / count the Spark side uses — that
-    * determinism fix is what makes this oracle possible), empty cells carry
-    * the previous centroid.
-    */
-  private def ivfRecomputeSql(c: String, a: String): String =
-    s"""SELECT prev.cid, COALESCE(r.nvec, prev.cvec) AS cvec FROM $c prev LEFT JOIN (SELECT cid, list(m ORDER BY pos) AS nvec FROM (SELECT a.cid, u.pos, CAST(SUM(CAST(u.x AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*) AS m FROM embeddings e JOIN $a a ON e.vec_id = a.vec_id, LATERAL (SELECT unnest(list_transform(e.embedding, f -> CAST(f AS DOUBLE))) AS x, generate_subscripts(e.embedding, 1) AS pos) u GROUP BY a.cid, u.pos) GROUP BY cid) r ON prev.cid = r.cid"""
-
-  // --- PQ parity (q188): per-subspace L2 k-means over embedding slices.
-  // pl2s is the 16-dim squared-Euclidean fold, left-to-right like the
-  // codegen VecL2Sq loop (each term is one subtract+multiply — exact
-  // cross-engine). Lambda vars are fresh names (macro expansion is
-  // textual; see §6).
-
-  private val PQ_MACRO =
-    "CREATE OR REPLACE MACRO pl2s(v, w) AS list_reduce(list_transform(range(1, 17), i2 -> (CAST(v[i2] AS DOUBLE) - w[i2]) * (CAST(v[i2] AS DOUBLE) - w[i2])), (a2, b2) -> a2 + b2)"
-
-  /** Nearest-codeword assignment (L2 ascending, ties to lowest cid) for
-    * subspace CTE `em` (vec_id, sv) against codebook CTE `c`.
-    */
-  private def pqAssignSql(em: String, c: String): String =
-    s"""SELECT vec_id, cid FROM (SELECT e.vec_id, c.cid, ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY pl2s(e.sv, c.cvec), c.cid) AS rnk FROM $em e CROSS JOIN $c c) WHERE rnk = 1"""
-
-  /** Lloyd recompute on a slice CTE — the same DECIMAL(30,12)-exact
-    * per-position means as [[ivfRecomputeSql]], over `sv` instead of the
-    * full embedding.
-    */
-  private def pqRecomputeSql(em: String, c: String, a: String): String =
-    s"""SELECT prev.cid, COALESCE(r.nvec, prev.cvec) AS cvec FROM $c prev LEFT JOIN (SELECT cid, list(m ORDER BY pos) AS nvec FROM (SELECT a.cid, u.pos, CAST(SUM(CAST(u.x AS DECIMAL(30,12))) AS DOUBLE) / COUNT(*) AS m FROM $em e JOIN $a a ON e.vec_id = a.vec_id, LATERAL (SELECT unnest(list_transform(e.sv, f -> CAST(f AS DOUBLE))) AS x, generate_subscripts(e.sv, 1) AS pos) u GROUP BY a.cid, u.pos) GROUP BY cid) r ON prev.cid = r.cid"""
-
-  /** The PQ pipeline as CTE text (4 independent subspace k-means — init +
-    * 2 Lloyd iterations — code assignment, concatenated reconstruction in
-    * `recon(nid, rv)`), shared by the q188 and q195 oracles.
-    */
-  private def pqCtes(trainWhere: String = ""): String = {
-    val per = (0 until 4).map { m =>
-      val lo = m * 16 + 1
-      val hi = (m + 1) * 16
-      // emt = the TRAINING slice (the whole corpus, or the index's base
-      // set for the incremental-append replay); code assignment always
-      // covers em (all vectors)
-      s"""em$m AS (SELECT vec_id, embedding[$lo:$hi] AS sv FROM embeddings), emt$m AS (SELECT vec_id, sv FROM em$m $trainWhere), c${m}_0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid, list_transform(sv, x -> CAST(x AS DOUBLE)) AS cvec FROM (SELECT vec_id, sv FROM emt$m ORDER BY vec_id LIMIT 16)), a${m}_1 AS (${pqAssignSql(s"emt$m", s"c${m}_0")}), c${m}_1 AS (${pqRecomputeSql(s"emt$m", s"c${m}_0", s"a${m}_1")}), a${m}_2 AS (${pqAssignSql(s"emt$m", s"c${m}_1")}), c${m}_2 AS (${pqRecomputeSql(s"emt$m", s"c${m}_1", s"a${m}_2")}), code$m AS (${pqAssignSql(s"em$m", s"c${m}_2")})"""
-    }.mkString(", ")
-    val books = (0 until 4).map(m =>
-      s"SELECT $m AS sub_idx, cid, cvec FROM c${m}_2").mkString(" UNION ALL ")
-    val codes = (0 until 4).map(m =>
-      s"SELECT vec_id, $m AS sub_idx, cid FROM code$m").mkString(" UNION ALL ")
-    s"""$per, books AS ($books), codes AS ($codes), recon AS (SELECT c.vec_id AS nid, flatten(list(b.cvec ORDER BY c.sub_idx)) AS rv FROM codes c JOIN books b ON c.sub_idx = b.sub_idx AND c.cid = b.cid GROUP BY c.vec_id)"""
-  }
-
-  /** Full q188 replay: PQ pipeline + brute-force ADC cosine ranking. */
-  /** Greedy tokenizer replay: 10 unrolled maximal-munch steps (longest
-    * word is 8 chars; the extra steps are no-ops on an empty suffix),
-    * each taking the longest vocabulary prefix via a correlated arg_max —
-    * ties are impossible (equal-length prefixes of one string are equal).
-    */
-  /** DuckDB replay of [[graft.operators.Graph.longestPathDag]] on the
-    * supplier DAG: the relaxation unrolled to a fixed CTE chain (the
-    * q224 fixpoint-unroll pattern — recursive CTEs cannot aggregate in
-    * the recursive term). `rounds` must exceed the longest path length;
-    * 20 covers suppliers to k = 2^20.
-    */
-  private def longestPathSql(rounds: Int): String = {
-    val ed = "ed AS (SELECT k // 2 AS src, k AS dst, CAST(concat('0x', substr(md5(concat('e2:', CAST(k AS VARCHAR))), 1, 13)) AS BIGINT) % 1000 AS w FROM sk WHERE k >= 2 UNION ALL SELECT k // 3, k, CAST(concat('0x', substr(md5(concat('e3:', CAST(k AS VARCHAR))), 1, 13)) AS BIGINT) % 1000 FROM sk WHERE k >= 3 AND k // 3 <> k // 2)"
-    val d0 = "d0 AS (SELECT id, CAST(0 AS BIGINT) AS d FROM (SELECT src AS id FROM ed UNION SELECT dst FROM ed) n WHERE id NOT IN (SELECT dst FROM ed))"
-    // AS MATERIALIZED is load-bearing: each round references its
-    // predecessor twice, so inlined CTEs re-evaluate 2^rounds times
-    val steps = (1 to rounds).map(i =>
-      s"d$i AS MATERIALIZED (SELECT id, MAX(d) AS d FROM (SELECT id, d FROM d${i - 1} UNION ALL SELECT e.dst AS id, p.d + e.w AS d FROM d${i - 1} p JOIN ed e ON e.src = p.id) u GROUP BY id)").mkString(", ")
-    s"WITH sk AS (SELECT CAST(s_suppkey AS BIGINT) AS k FROM supplier), $ed, $d0, $steps SELECT id, CAST(d AS BIGINT) AS dist FROM d$rounds ORDER BY id"
-  }
-
-  /** DuckDB replay of [[graft.operators.Features.cuped]] on the events
-    * pre/post split: θ appears many times, so the SQL is assembled with
-    * the expression inlined once here — every division/multiplication
-    * parenthesized to the engine's pinned order.
-    */
-  private def cupedSql: String = {
-    val th = "((g.gn * g.gsxy - g.gsx * g.gsy) / (g.gn * g.gsxx - g.gsx * g.gsx))"
-    val meanY = "(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))"
-    val meanX = "(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))"
-    val meanD = s"($meanY - $th * $meanX)"
-    s"""WITH e AS (SELECT user_id, epoch_ns(ts) AS t, CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM events), mm AS (SELECT (MIN(t) + MAX(t)) // 2 AS mid FROM e), per AS (SELECT user_id, CAST(SUM(CASE WHEN t <= mm.mid THEN cents ELSE 0 END) AS BIGINT) AS x, CAST(SUM(CASE WHEN t > mm.mid THEN cents ELSE 0 END) AS BIGINT) AS y FROM e, mm GROUP BY user_id), ar AS (SELECT CASE WHEN CAST(concat('0x', substr(md5(concat('cuped:', CAST(user_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 = 0 THEN 'control' ELSE 'treatment' END AS arm, x, y FROM per), pa AS (SELECT arm, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(y AS DECIMAL(38,0))) AS sy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))) AS sxx, SUM(CAST(y AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS syy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS sxy FROM ar GROUP BY arm), g AS (SELECT CAST(SUM(n) AS DOUBLE) AS gn, CAST(SUM(sx) AS DOUBLE) AS gsx, CAST(SUM(sy) AS DOUBLE) AS gsy, CAST(SUM(sxx) AS DOUBLE) AS gsxx, CAST(SUM(sxy) AS DOUBLE) AS gsxy FROM pa) SELECT arm, n, round($meanY, 6) AS mean_y, round($meanY - $th * ($meanX - g.gsx / g.gn), 6) AS mean_y_adj, round($th, 6) AS theta, round(((CAST(syy AS DOUBLE) - 2.0 * $th * CAST(sxy AS DOUBLE) + $th * $th * CAST(sxx AS DOUBLE)) / CAST(n AS DOUBLE) - $meanD * $meanD) / (CAST(syy AS DOUBLE) / CAST(n AS DOUBLE) - $meanY * $meanY), 6) AS var_ratio FROM pa, g ORDER BY arm"""
-  }
-
-  /** DuckDB replay of [[graft.operators.Linkage.fellegiSunter]]: the EM
-    * unrolled to `iters` MATERIALIZED state CTEs over the 2³-pattern
-    * census; state probabilities live as DECIMAL(11,9) so the E-step
-    * products are exact decimals matching the engine's BigDecimal
-    * arithmetic, with one pinned double division per update onto the
-    * 1e-9 grid.
-    */
-  private def fsSql(iters: Int): String = {
-    def mp(pfx: String) = (1 to 3).map(i =>
-      s"(CASE WHEN c.b$i = 1 THEN s.$pfx$i ELSE 1 - s.$pfx$i END)")
-      .mkString(" * ")
-    // Winkler clamp on the 1e-9 grid — mirrors Linkage.grid9's
-    // max(1e-9).min(1-1e-9) so the degenerate-census path (all resp
-    // rounding to 0 at scale) replays instead of dividing 0/0.
-    def cl(x: String) =
-      s"CAST(least(greatest(round($x, 9), 0.000000001), 0.999999999) AS DECIMAL(11,9))"
-    val steps = (1 to iters).map { i =>
-      val e = s"e$i AS MATERIALIZED (SELECT c.b1, c.b2, c.b3, c.cnt, " +
-        cl(s"CAST(s.lam * ${mp("m")} AS DOUBLE) / " +
-          s"CAST(s.lam * ${mp("m")} + (1 - s.lam) * ${mp("u")} AS DOUBLE)") +
-        s" AS resp FROM cen c, s${i - 1} s)"
-      def mU(i2: Int) =
-        cl(s"CAST(SUM(CASE WHEN b$i2 = 1 THEN cnt * resp ELSE 0 END) AS DOUBLE) / CAST(SUM(cnt * resp) AS DOUBLE)") + s" AS m$i2"
-      def uU(i2: Int) =
-        cl(s"CAST(SUM(CASE WHEN b$i2 = 1 THEN cnt * (1 - resp) ELSE 0 END) AS DOUBLE) / CAST(SUM(cnt * (1 - resp)) AS DOUBLE)") + s" AS u$i2"
-      val st = s"s$i AS MATERIALIZED (SELECT " +
-        cl(s"CAST(SUM(cnt * resp) AS DOUBLE) / CAST(SUM(cnt) AS DOUBLE)") + " AS lam, " +
-        (1 to 3).map(mU).mkString(", ") + ", " +
-        (1 to 3).map(uU).mkString(", ") + s" FROM e$i)"
-      s"$e, $st"
-    }.mkString(", ")
-    def outRow(name: String, i: Int) =
-      s"SELECT '$name' AS field, CAST(s.m$i AS DOUBLE) AS m_prob, " +
-        s"CAST(s.u$i AS DOUBLE) AS u_prob, " +
-        s"round(ln(CAST(s.m$i AS DOUBLE) / CAST(s.u$i AS DOUBLE)), 6) AS w_agree, " +
-        s"round(ln(CAST(1 - s.m$i AS DOUBLE) / CAST(1 - s.u$i AS DOUBLE)), 6) AS w_disagree, " +
-        s"CAST(s.lam AS DOUBLE) AS lambda FROM s$iters s"
-    "WITH r AS (SELECT c_custkey, c_nationkey, c_mktsegment, " +
-      "CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS bal FROM customer), " +
-      "rk AS (SELECT *, ROW_NUMBER() OVER (ORDER BY bal, c_custkey) AS rnk FROM r), " +
-      "pr AS (SELECT CAST(a.c_nationkey = b.c_nationkey AS INTEGER) AS b1, " +
-      "CAST(a.c_mktsegment = b.c_mktsegment AS INTEGER) AS b2, " +
-      "CAST(abs(a.bal - b.bal) < 5000 AS INTEGER) AS b3 " +
-      "FROM rk a JOIN rk b ON b.rnk - a.rnk IN (1, 2, 3)), " +
-      "cen AS MATERIALIZED (SELECT b1, b2, b3, CAST(COUNT(*) AS DECIMAL(38,0)) AS cnt FROM pr GROUP BY 1, 2, 3), " +
-      "s0 AS (SELECT CAST(0.1 AS DECIMAL(11,9)) AS lam, " +
-      (1 to 3).map(i => s"CAST(0.9 AS DECIMAL(11,9)) AS m$i").mkString(", ") + ", " +
-      (1 to 3).map(i => s"CAST(0.1 AS DECIMAL(11,9)) AS u$i").mkString(", ") + "), " +
-      steps +
-      s" ${outRow("close_balance", 3)} UNION ALL ${outRow("same_nation", 1)} UNION ALL ${outRow("same_segment", 2)} ORDER BY field"
-  }
-
-  /** DuckDB replay of [[graft.operators.Drift.yuenTTest]]: every trimmed/
-    * winsorized sum from the value domain, t/df expressions pinned to
-    * the engine's operation order (assembled here so the repeated
-    * subexpressions stay literally identical).
-    */
-  private def yuenSql: String = {
-    def h(n: String, l: String) =
-      s"(CAST($n AS DOUBLE) - 2.0 * CAST($l AS DOUBLE))"
-    def d(sww: String, sw: String, n: String, l: String) =
-      s"((CAST($sww AS DOUBLE) - CAST($sw AS DOUBLE) * CAST($sw AS DOUBLE) / CAST($n AS DOUBLE)) / (${h(n, l)} * (${h(n, l)} - 1.0)))"
-    def tmu(ts: String, n: String, l: String) =
-      s"(CAST($ts AS DOUBLE) / ${h(n, l)})"
-    val da = d("swwa", "swa", "na", "la")
-    val db = d("swwb", "swb", "nb", "lb")
-    val w = "least(greatest(v, vlo), vhi)"
-    s"""WITH e AS (SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v, CASE WHEN event_type = 'purchase' THEN 'a' ELSE 'b' END AS g FROM events WHERE event_type IN ('purchase', 'view')), bv AS (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS t FROM e GROUP BY 1, 2), rk AS (SELECT g, v, t, CAST(SUM(t) OVER (PARTITION BY g ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c, CAST(SUM(t) OVER (PARTITION BY g) AS BIGINT) AS n FROM bv), r2 AS (SELECT *, (n * 1000) // 10000 AS l FROM rk), bd AS (SELECT g, MIN(CASE WHEN c >= l + 1 THEN v END) AS vlo, MIN(CASE WHEN c >= n - l THEN v END) AS vhi FROM r2 GROUP BY g), st AS (SELECT r2.g, MAX(n) AS n, MAX(l) AS l, SUM(CAST(v AS DECIMAL(38,0)) * CAST(greatest(0, least(c, n - l) - greatest(c - t, l)) AS DECIMAL(38,0))) AS ts, SUM(CAST($w AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0))) AS sw, SUM(CAST($w AS DECIMAL(38,0)) * CAST($w AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0))) AS sww FROM r2 JOIN bd ON r2.g = bd.g GROUP BY r2.g), aa AS (SELECT n AS na, l AS la, ts AS tsa, sw AS swa, sww AS swwa FROM st WHERE g = 'a'), bb AS (SELECT n AS nb, l AS lb, ts AS tsb, sw AS swb, sww AS swwb FROM st WHERE g = 'b') SELECT na AS n_a, nb AS n_b, round(${tmu("tsa", "na", "la")}, 6) AS tm_a, round(${tmu("tsb", "nb", "lb")}, 6) AS tm_b, round((${tmu("tsa", "na", "la")} - ${tmu("tsb", "nb", "lb")}) / sqrt($da + $db), 6) AS t_yuen, round(($da + $db) * ($da + $db) / ($da * $da / (${h("na", "la")} - 1.0) + $db * $db / (${h("nb", "lb")} - 1.0)), 6) AS df_yuen FROM aa, bb"""
-  }
-
-  /** DuckDB replay of [[graft.operators.Graph.hits]]: the alternating
-    * power iteration unrolled to `rounds` MATERIALIZED CTE pairs, all
-    * EXACT DECIMAL(38,0) integer sums — zero floating point anywhere,
-    * relative scores by integer division.
-    */
-  private def hitsSql(rounds: Int): String = {
-    val steps = (1 to rounds).map { i =>
-      val aR = s"a$i AS MATERIALIZED (SELECT e.a, CAST(SUM(hh.s) AS DECIMAL(38,0)) AS s FROM e JOIN h${i - 1} hh ON hh.h = e.h GROUP BY e.a)"
-      val hR = s"h$i AS MATERIALIZED (SELECT e.h, CAST(SUM(aa.s) AS DECIMAL(38,0)) AS s FROM e JOIN a$i aa ON aa.a = e.a GROUP BY e.h)"
-      Seq(aR, hR).mkString(", ")
-    }.mkString(", ")
-    "WITH e AS MATERIALIZED (SELECT DISTINCT CAST(o_custkey AS BIGINT) AS h, CAST(l_partkey AS BIGINT) AS a FROM orders JOIN lineitem ON o_orderkey = l_orderkey), " +
-      "h0 AS (SELECT DISTINCT h, CAST(1 AS DECIMAL(38,0)) AS s FROM e), " +
-      steps +
-      s" SELECT * FROM (SELECT CAST(ROW_NUMBER() OVER (ORDER BY s DESC, a) AS BIGINT) AS rank, a AS part, CAST((s * 1000000 - (s * 1000000) % (SELECT MAX(s) FROM a$rounds)) / (SELECT MAX(s) FROM a$rounds) AS BIGINT) AS score_ppm FROM a$rounds) WHERE rank <= 10 ORDER BY rank"
-  }
-
-  /** Register-for-register HLL replay (q379 AND q381: the streaming
-    * store's MAX-merge makes batch boundaries invisible, so both gate
-    * against the identical whole-corpus sketch).
-    */
-  private val hllOracleSql: String =
-    """WITH h AS (SELECT event_type AS g, CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 13)) AS BIGINT) AS hh FROM events), b AS (SELECT g, hh % 256 AS j, CASE WHEN hh // 256 = 0 THEN 45 ELSE 45 - length(bin(hh // 256)) END AS rho FROM h), regs0 AS (SELECT g, j, MAX(rho) AS m FROM b GROUP BY 1, 2), regs AS (SELECT * FROM regs0 UNION ALL SELECT '(all)' AS g, j, MAX(m) AS m FROM regs0 GROUP BY j), agg AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n_regs, SUM(CAST(round(pow(2.0, -m), 18) AS DECIMAL(38,18))) AS sp FROM regs GROUP BY g), e2 AS (SELECT g, n_regs, 256 - n_regs AS v_empty, 0.7213 / (1.0 + 1.079 / 256.0) * 65536.0 / CAST(sp + CAST(256 - n_regs AS DECIMAL(38,18)) AS DOUBLE) AS eraw FROM agg), ex AS (SELECT event_type AS g, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact FROM events GROUP BY 1 UNION ALL SELECT '(all)', CAST(COUNT(DISTINCT user_id) AS BIGINT) FROM events) SELECT e2.g, e2.n_regs, CAST(e2.v_empty AS BIGINT) AS v_empty, round(CASE WHEN eraw <= 640.0 AND v_empty > 0 THEN 256.0 * ln(256.0 / CAST(v_empty AS DOUBLE)) ELSE eraw END, 6) AS estimate, ex.n_exact, round((CASE WHEN eraw <= 640.0 AND v_empty > 0 THEN 256.0 * ln(256.0 / CAST(v_empty AS DOUBLE)) ELSE eraw END - CAST(n_exact AS DOUBLE)) / CAST(n_exact AS DOUBLE), 6) AS rel_error FROM e2 JOIN ex ON e2.g = ex.g ORDER BY e2.g"""
-
-  private val tokenizeOracleSql: String = {
-    val steps = (1 to 10).map(i =>
-      s", s$i AS (SELECT w, freq, CASE WHEN rest = '' THEN rest ELSE " +
-        "substr(rest, length((SELECT arg_max(t, length(t)) FROM vocab WHERE starts_with(rest, t))) + 1) END AS rest, " +
-        "CASE WHEN rest = '' THEN toks ELSE " +
-        "list_append(toks, (SELECT arg_max(t, length(t)) FROM vocab WHERE starts_with(rest, t))) END AS toks " +
-        s"FROM s${i - 1})").mkString("")
-    """WITH freq AS (SELECT w, COUNT(*) AS freq FROM (SELECT unnest(regexp_split_to_array(trim(lower(text)), '\s+')) AS w FROM documents) GROUP BY w), """ +
-      "top AS (SELECT w AS t FROM freq ORDER BY freq DESC, w LIMIT 15), " +
-      "chars AS (SELECT DISTINCT substr(w, ci + 1, 1) AS t FROM freq, LATERAL (SELECT unnest(range(length(w))) AS ci) u), " +
-      "vocab AS (SELECT DISTINCT t FROM (SELECT t FROM top UNION ALL SELECT t FROM chars)), " +
-      "s0 AS (SELECT w, freq, w AS rest, CAST([] AS VARCHAR[]) AS toks FROM freq)" +
-      steps +
-      " SELECT w, freq, CAST(len(toks) AS BIGINT) AS n_tokens, array_to_string(toks, '|') AS tokens FROM s10 ORDER BY w"
-  }
-
-  private def canonicalOracleSql: String =
-    s"""$HASH_MACROS; WITH RECURSIVE hs AS ($DOC_HASHES), shingled AS (SELECT doc_id, list_transform(range(CASE WHEN n >= 3 THEN n - 2 ELSE 1 END), p -> shmix(shmix(h[p+1], coalesce(h[p+2], ${padLit(1)})), coalesce(h[p+3], ${padLit(2)}))) AS sh FROM hs), sigs AS (SELECT doc_id AS id, $sigSql AS sig FROM shingled), bands AS (SELECT id, sig, unnest(list_zip([${(0 until 8).map(bandSql).mkString(", ")}], [0,1,2,3,4,5,6,7])) AS z FROM sigs), wb AS (SELECT id, sig, z[2] AS band_idx, z[1] AS band_hash, ROW_NUMBER() OVER (PARTITION BY z[2], z[1] ORDER BY id) AS rn FROM bands), p AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b FROM wb a JOIN wb b ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.id < b.id WHERE a.rn <= 64 AND b.rn <= 64 AND CAST(len(list_filter(range(32), i -> a.sig[i+1] = b.sig[i+1])) AS DOUBLE) / 32.0 >= 0.3), e AS (SELECT id_a AS src, id_b AS dst FROM p UNION ALL SELECT id_b, id_a FROM p), reach(node, label) AS (SELECT doc_id, doc_id FROM documents UNION SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.node), cl AS (SELECT node AS doc_id, MIN(label) AS cluster_rep FROM reach GROUP BY node), rk AS (SELECT cl.doc_id, cl.cluster_rep, ROW_NUMBER() OVER (PARTITION BY cl.cluster_rep ORDER BY d.n_chars DESC, cl.doc_id) AS r FROM cl JOIN documents d ON d.doc_id = cl.doc_id) SELECT doc_id, cluster_rep, CAST(CASE WHEN r = 1 THEN 1 ELSE 0 END AS INT) AS keep FROM rk ORDER BY doc_id"""
-
-  private val wordClustersOracleSql: String =
-    """WITH RECURSIVE v AS (SELECT DISTINCT unnest(regexp_split_to_array(trim(text), '\s+')) AS w FROM documents), p AS (SELECT a.w AS wa, b.w AS wb FROM v a JOIN v b ON length(b.w) BETWEEN length(a.w) - 1 AND length(a.w) + 1 AND a.w < b.w WHERE levenshtein(a.w, b.w) <= 2), ed AS (SELECT wa AS src, wb AS dst FROM p UNION ALL SELECT wb AS src, wa AS dst FROM p), nodes AS (SELECT DISTINCT src AS node FROM ed), reach(node, label) AS (SELECT node, node FROM nodes UNION SELECT ed.dst, r.label FROM reach r JOIN ed ON ed.src = r.node) SELECT node AS w, MIN(label) AS cluster_rep FROM reach GROUP BY node ORDER BY w"""
-
-  /** q224 replay: iterative k-core peeling unrolled to a fixed 6 rounds —
-    * peeling is monotone, so rounds past the fixpoint are identity and the
-    * unroll is exact for any graph stabilizing within it (this one: 2).
-    */
-  /** q415 replay: q281's journey census, then the 8-round geometric
-    * series for expected steps (st, 1e6 scale) and conv/drop absorption
-    * (cv/dv, 1e9 scale) in pure integer arithmetic — the same
-    * floor-divide recurrence the Scala fold runs, bit for bit.
-    */
-  private val absorbingOracleSql: String = {
-    val rounds = 8
-    val sb = new StringBuilder(
-      "WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000000000 AS sec, event_id FROM events), " +
-        "o AS (SELECT user_id, event_type, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY sec, event_id) AS rn FROM e), " +
-        "fp AS (SELECT user_id, MIN(rn) AS prn FROM o WHERE event_type = 'purchase' GROUP BY 1), " +
-        "p AS (SELECT o.user_id, o.event_type, o.rn FROM o LEFT JOIN fp USING (user_id) WHERE fp.prn IS NULL OR o.rn <= fp.prn), " +
-        "st AS (SELECT 'start' AS src, event_type AS dst FROM p WHERE rn = 1), " +
-        "sq AS (SELECT event_type AS src, lead(event_type, 1) OVER (PARTITION BY user_id ORDER BY rn) AS nxt FROM p), " +
-        "tr0 AS (SELECT src, CASE WHEN nxt IS NOT NULL THEN nxt WHEN src <> 'purchase' THEN 'drop' ELSE NULL END AS dst FROM sq UNION ALL SELECT src, dst FROM st), " +
-        "cnt AS (SELECT src, CASE WHEN dst = 'purchase' THEN 'conv' ELSE dst END AS dst, COUNT(*) AS n FROM tr0 WHERE dst IS NOT NULL GROUP BY 1, 2), " +
-        "tot AS (SELECT src, SUM(n) AS nt FROM cnt GROUP BY 1), " +
-        "pm AS (SELECT c.src, c.dst, (c.n * 1000000000) // t.nt AS p9 FROM cnt c JOIN tot t ON c.src = t.src), " +
-        "stt AS (SELECT DISTINCT src AS state FROM pm), " +
-        "cvp AS (SELECT src AS state, p9 FROM pm WHERE dst = 'conv'), " +
-        "drp AS (SELECT src AS state, p9 FROM pm WHERE dst = 'drop'), " +
-        "i0 AS (SELECT s.state, CAST(1000000 AS BIGINT) AS stp, COALESCE(c.p9, 0) AS cv, COALESCE(d.p9, 0) AS dv FROM stt s LEFT JOIN cvp c ON c.state = s.state LEFT JOIN drp d ON d.state = s.state)")
-    for (t <- 1 to rounds)
-      sb.append(s", i$t AS (SELECT s.state, " +
-        "1000000 + (COALESCE(SUM(t.p9 * pv.stp), 0) // 1000000000) AS stp, " +
-        "COALESCE(MAX(c.p9), 0) + (COALESCE(SUM(t.p9 * pv.cv), 0) // 1000000000) AS cv, " +
-        "COALESCE(MAX(d.p9), 0) + (COALESCE(SUM(t.p9 * pv.dv), 0) // 1000000000) AS dv " +
-        "FROM stt s LEFT JOIN cvp c ON c.state = s.state LEFT JOIN drp d ON d.state = s.state " +
-        "LEFT JOIN pm t ON t.src = s.state AND t.dst NOT IN ('conv', 'drop') " +
-        s"LEFT JOIN i${t - 1} pv ON pv.state = t.dst GROUP BY s.state)")
-    sb.append(s" SELECT f.state, CAST(t2.nt AS BIGINT) AS n_out, " +
-      "round(CAST(f.stp AS DOUBLE) / 1000000.0, 6) AS exp_steps, " +
-      "round(CAST(f.cv AS DOUBLE) / 1000000000.0, 6) AS p_conv, " +
-      "round(CAST(f.dv AS DOUBLE) / 1000000000.0, 6) AS p_drop " +
-      s"FROM i$rounds f JOIN tot t2 ON t2.src = f.state ORDER BY f.state")
-    sb.toString
-  }
-
-  /** q427 replay: the synchronized deferred-acceptance rounds as a
-    * fixed unroll over the one-integer-per-agent state — live agents
-    * occupy their rank-(ptr+1) target, each target keeps its cap best,
-    * rejections advance ptr; rounds past the fixpoint are no-ops.
-    */
-  private val stableMatchOracleSql: String = {
-    val rounds = 10
-    val sb = new StringBuilder(
-      "WITH ag AS (SELECT s_suppkey AS agent FROM supplier), " +
-        "tg AS (SELECT n_nationkey AS target FROM nation), " +
-        "sp AS MATERIALIZED (SELECT agent, target, " +
-        "CAST(ROW_NUMBER() OVER (PARTITION BY agent ORDER BY CAST(concat('0x', substr(md5(concat('gs1:', CAST(agent AS VARCHAR), ':', CAST(target AS VARCHAR))), 1, 13)) AS BIGINT), target) AS BIGINT) AS a_rank, " +
-        "CAST(concat('0x', substr(md5(concat('gs2:', CAST(agent AS VARCHAR), ':', CAST(target AS VARCHAR))), 1, 13)) AS BIGINT) AS t_score FROM ag, tg), " +
-        "nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM tg), " +
-        "cp AS (SELECT ((SELECT CAST(COUNT(*) AS BIGINT) FROM ag) + n - 1) // n + 1 AS cap FROM nt), " +
-        "st0 AS (SELECT agent, CAST(0 AS BIGINT) AS ptr FROM ag)")
-    for (t <- 1 to rounds) {
-      sb.append(s", occ$t AS (SELECT st.agent, sp.target, sp.t_score FROM st${t - 1} st JOIN sp ON sp.agent = st.agent AND sp.a_rank = st.ptr + 1, nt WHERE st.ptr < nt.n)")
-      sb.append(s", kp$t AS (SELECT agent FROM (SELECT agent, ROW_NUMBER() OVER (PARTITION BY target ORDER BY t_score, agent) AS rk FROM occ$t) WHERE rk <= (SELECT cap FROM cp))")
-      sb.append(s", st$t AS MATERIALIZED (SELECT st.agent, st.ptr + CASE WHEN o.agent IS NOT NULL AND k.agent IS NULL THEN 1 ELSE 0 END AS ptr FROM st${t - 1} st LEFT JOIN (SELECT DISTINCT agent FROM occ$t) o ON o.agent = st.agent LEFT JOIN kp$t k ON k.agent = st.agent)")
+  /** The registered name for `name`: the name itself, or the one query
+    * whose id (the `qNNN` before the first `_`) it is. Fails otherwise. */
+  def resolve(name: String): String =
+    if (queries.contains(name)) name
+    else queries.keys.filter(_.takeWhile(_ != '_') == name).toSeq match {
+      case Seq(full) => full
+      case Seq() => throw new NoSuchElementException(s"no query named $name")
+      case many => throw new IllegalArgumentException(
+        s"$name matches ${many.sorted.mkString(", ")}")
     }
-    sb.append(s" SELECT st.agent AS s_suppkey, sp.target AS n_nationkey, sp.a_rank FROM st$rounds st LEFT JOIN sp ON sp.agent = st.agent AND sp.a_rank = st.ptr + 1 ORDER BY s_suppkey")
-    sb.toString
-  }
-
-  /** k-truss peeling replayed as a fixed unroll: per round, canonical
-    * x<y<z triangle enumeration, per-edge support census, edges below
-    * k−2 dropped. Peeling is monotone, so rounds past the fixpoint are
-    * no-ops and any unroll >= the convergence depth is exact.
-    */
-  private val ktrussOracleSql: String = {
-    val minSup = 2 // k = 4
-    val rounds = 8
-    // MATERIALIZED: the triangle CTE references e(i-1) three times —
-    // without it DuckDB inlines each reference and the chain expands
-    // 3^rounds-fold (the q224 lesson)
-    val sb = new StringBuilder(
-      "WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem), " +
-        "e0 AS MATERIALIZED (SELECT DISTINCT a.pk AS a, b.pk AS b FROM li a JOIN li b " +
-        "ON a.ok = b.ok AND a.pk < b.pk)")
-    for (i <- 1 to rounds) {
-      sb.append(s", t$i AS (SELECT e1.a AS x, e1.b AS y, e2.b AS z FROM e${i - 1} e1 JOIN e${i - 1} e2 ON e1.a = e2.a AND e1.b < e2.b JOIN e${i - 1} e3 ON e3.a = e1.b AND e3.b = e2.b)")
-      sb.append(s", s$i AS (SELECT a, b, CAST(COUNT(*) AS BIGINT) AS support FROM (SELECT x AS a, y AS b FROM t$i UNION ALL SELECT x, z FROM t$i UNION ALL SELECT y, z FROM t$i) GROUP BY a, b)")
-      sb.append(s", e$i AS MATERIALIZED (SELECT a, b, support FROM s$i WHERE support >= $minSup)")
-    }
-    sb.append(s" SELECT a, b, support FROM e$rounds ORDER BY a, b")
-    sb.toString
-  }
-
-  private val kcoreOracleSql: String = {
-    val k = 10
-    val rounds = 6
-    // MATERIALIZED: without it DuckDB inlines each CTE at every reference
-    // and the 6-round chain expands 3^6-fold (it ran out of file handles
-    // re-opening the parquet per inlined e0)
-    val sb = new StringBuilder(
-      "WITH e0 AS MATERIALIZED (SELECT DISTINCT o_custkey AS a, -(l_suppkey + 1) AS b " +
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey)")
-    for (i <- 1 to rounds) {
-      sb.append(s", d$i AS (SELECT node, COUNT(*) AS c FROM (SELECT a AS node FROM e${i - 1} UNION ALL SELECT b AS node FROM e${i - 1}) GROUP BY node)")
-      sb.append(s", k$i AS (SELECT node FROM d$i WHERE c >= $k)")
-      sb.append(s", e$i AS MATERIALIZED (SELECT e.a, e.b FROM e${i - 1} e JOIN k$i x ON e.a = x.node JOIN k$i y ON e.b = y.node)")
-    }
-    sb.append(s" SELECT node, CAST(COUNT(*) AS BIGINT) AS core_deg FROM (SELECT a AS node FROM e$rounds UNION ALL SELECT b AS node FROM e$rounds) GROUP BY node ORDER BY node")
-    sb.toString
-  }
-
-  private def pqOracleSql: String =
-    s"""$VEC_MACROS; $PQ_MACRO; WITH ${pqCtes()}, scored AS (SELECT q.vec_id AS qid, r.nid, round(pcos(q.embedding, r.rv), 4) AS cos_r FROM embeddings q CROSS JOIN recon r WHERE q.vec_id < 10 AND r.nid <> q.vec_id), rk AS (SELECT qid, nid, cos_r, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_r DESC NULLS LAST, nid) AS rnk FROM scored) SELECT qid, rnk, nid, cos_r FROM rk WHERE rnk <= 5 ORDER BY qid, rnk"""
-
-  /** q208 replay: codebooks trained on the base corpus only, codes over
-    * ALL vectors — the incremental-append semantics.
-    */
-  private def pqAppendOracleSql: String =
-    s"""$VEC_MACROS; $PQ_MACRO; WITH ${pqCtes("WHERE vec_id % 5 <> 0")}, scored AS (SELECT q.vec_id AS qid, r.nid, round(pcos(q.embedding, r.rv), 4) AS cos_r FROM embeddings q CROSS JOIN recon r WHERE q.vec_id < 10 AND r.nid <> q.vec_id), rk AS (SELECT qid, nid, cos_r, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_r DESC NULLS LAST, nid) AS rnk FROM scored) SELECT qid, rnk, nid, cos_r FROM rk WHERE rnk <= 5 ORDER BY qid, rnk"""
-
-  /** Full q195 replay: q40's coarse k-means + cell probe for candidate
-    * pruning, PQ reconstruction for the scoring — the IVFADC composite.
-    */
-  private def ivfPqOracleSql: String =
-    s"""$VEC_MACROS; $PQ_MACRO; WITH g0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)), ga1 AS (${ivfAssignSql("g0")}), g1 AS (${ivfRecomputeSql("g0", "ga1")}), ga2 AS (${ivfAssignSql("g1")}), g2 AS (${ivfRecomputeSql("g1", "ga2")}), cells AS (${ivfAssignSql("g2")}), ${pqCtes()}, probes AS (SELECT qid, cid FROM (SELECT q.vec_id AS qid, c.cid, ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY pcos(q.embedding, c.cvec) DESC NULLS LAST, c.cid) AS rnk FROM embeddings q CROSS JOIN g2 c WHERE q.vec_id < 10) WHERE rnk <= 2), cand AS (SELECT DISTINCT p.qid, s.vec_id AS nid FROM probes p JOIN cells s ON p.cid = s.cid WHERE s.vec_id <> p.qid), scored AS (SELECT c.qid, c.nid, round(pcos(qe.embedding, r.rv), 4) AS cos_r FROM cand c JOIN embeddings qe ON qe.vec_id = c.qid JOIN recon r ON r.nid = c.nid), rk AS (SELECT qid, nid, cos_r, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_r DESC NULLS LAST, nid) AS rnk FROM scored) SELECT qid, rnk, nid, cos_r FROM rk WHERE rnk <= 5 ORDER BY qid, rnk"""
-
-  /** N-ary Morton bit-interleave replayed in SQL (mirrors
-    * Layout.zorderValueN: bit i of key j → position k*i + j).
-    */
-  private def zorderSqlN(bits: Int, keys: Seq[String]): String = {
-    val m = (1L << bits) - 1
-    val k = keys.size
-    (for { i <- 0 until bits; (c, j) <- keys.zipWithIndex }
-      yield s"((((($c) & $m) >> $i) & 1) << ${k * i + j})")
-      .mkString("(", " | ", ")")
-  }
-
-  private def zorderSql(x: String, y: String, bits: Int = 16): String =
-    zorderSqlN(bits, Seq(x, y))
-
-  /** One fk-containment candidate replayed: distinct key domains joined,
-    * parent-distinct via scalar subquery (mirrors Profiling.fkContainment).
-    */
-  private def fkPairSql(name: String, childTable: String, childCol: String,
-      parentTable: String, parentCol: String): String =
-    s"SELECT '$name' AS candidate, CAST(COUNT(*) AS BIGINT) AS n_child_distinct, " +
-      s"(SELECT CAST(COUNT(*) AS BIGINT) FROM (SELECT DISTINCT CAST($parentCol AS VARCHAR) AS k FROM $parentTable WHERE $parentCol IS NOT NULL)) AS n_parent_distinct, " +
-      s"CAST(SUM(CASE WHEN p.k IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_contained, " +
-      s"round(CAST(SUM(CASE WHEN p.k IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS containment, " +
-      s"CAST(CAST(SUM(CASE WHEN p.k IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) = CAST(COUNT(*) AS BIGINT) AS INTEGER) AS is_fk " +
-      s"FROM (SELECT DISTINCT CAST($childCol AS VARCHAR) AS k FROM $childTable WHERE $childCol IS NOT NULL) c " +
-      s"LEFT JOIN (SELECT DISTINCT CAST($parentCol AS VARCHAR) AS k FROM $parentTable WHERE $parentCol IS NOT NULL) p ON c.k = p.k"
-
-  /** DuckDB replay of [[graft.plans.HilbertIndex2]]'s xy2d walk: a
-    * list_reduce fold over the bit levels (top bit first), flip with the
-    * constant n−1 exactly like the engine's loop. The (x, y, d) state is
-    * PACKED INTO ONE BIGINT (x·2^3b | y·2^2b | d, so 4·bits ≤ 62) and
-    * every branch is arithmetic (rx·… + (1−rx)·…): DuckDB 1.0's
-    * list_reduce evaluates struct_pack accumulator fields IN PLACE when
-    * the lambda also references the element — a later field reading
-    * `a['x']` sees the already-overwritten value — so a struct state or
-    * a CASE over it silently computes the wrong walk (found while
-    * gating q355; the scalar fold measured exact on 20k random points).
-    */
-  private def hilbertSql(x: String, y: String, bits: Int): String = {
-    require(4 * bits <= 62, s"packed hilbert oracle needs 4*bits <= 62")
-    val m = (1L << bits) - 1
-    val dmask = (1L << (2 * bits)) - 1
-    val ys = 2 * bits
-    val xs = 3 * bits
-    val ax = s"(a >> $xs)"
-    val ay = s"((a >> $ys) & $m)"
-    val rx = s"((($ax) // e) & 1)"
-    val ry = s"((($ay) // e) & 1)"
-    s"(list_reduce(list_prepend(" +
-      s"CAST((($x) & $m) AS BIGINT) * ${1L << xs} + " +
-      s"CAST((($y) & $m) AS BIGINT) * ${1L << ys}, " +
-      s"list_transform(range(0, $bits), i -> " +
-      s"(CAST(1 AS BIGINT) << (${bits - 1} - i)))), " +
-      s"(a, e) -> " +
-      s"($ry * $ax + (1 - $ry) * ($rx * ($m - $ay) + (1 - $rx) * $ay)) * ${1L << xs} + " +
-      s"($ry * $ay + (1 - $ry) * ($rx * ($m - $ax) + (1 - $rx) * $ax)) * ${1L << ys} + " +
-      s"(a & $dmask) + e * e * xor(3 * $rx, $ry)) & $dmask)"
-  }
-
-  /** Rank-interpolated percentile replayed in SQL (mirrors q82's interp). */
-  private def interpSql(p: String): String = interpSqlCol(p, "o_totalprice")
-
-  /** Spark-exact percentile interpolation replay (see q82) over column `c`. */
-  private def interpSqlCol(p: String, c: String): String = {
-    val pos = s"(1.0 + $p * (CAST(n AS DOUBLE) - 1.0))"
-    s"(MAX(CASE WHEN rn = CAST(floor($pos) AS BIGINT) THEN $c END) + MAX($pos - floor($pos)) * (MAX(CASE WHEN rn = CAST(ceil($pos) AS BIGINT) THEN $c END) - MAX(CASE WHEN rn = CAST(floor($pos) AS BIGINT) THEN $c END)))"
-  }
-
-  private def lagInterpSql(p: String): String = interpSqlCol(p, "delay_s")
-
-  /** Shared by q233 (batch) and q242 (streaming hour-store monitor). */
-  private val gapDetectOracleSql =
-    """WITH hrs AS (SELECT DISTINCT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS h FROM events), b AS (SELECT event_type, MIN(h) AS mn, MAX(h) AS mx FROM hrs GROUP BY 1), sp AS (SELECT event_type, unnest(range(mn, mx + 1)) AS h FROM b), m AS (SELECT sp.event_type, sp.h FROM sp LEFT JOIN hrs ON sp.event_type = hrs.event_type AND sp.h = hrs.h WHERE hrs.h IS NULL), g AS (SELECT event_type, h, CASE WHEN h - lag(h) OVER (PARTITION BY event_type ORDER BY h) = 1 THEN 0 ELSE 1 END AS brk FROM m), i AS (SELECT event_type, h, CAST(SUM(brk) OVER (PARTITION BY event_type ORDER BY h ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS gap_idx FROM g) SELECT event_type, gap_idx, CAST(TIMESTAMP '1970-01-01' + MIN(h) * INTERVAL 1 HOUR AS TIMESTAMP) AS gap_start, CAST(TIMESTAMP '1970-01-01' + MAX(h) * INTERVAL 1 HOUR AS TIMESTAMP) AS gap_end, COUNT(*) AS n_missing FROM i GROUP BY 1, 2 ORDER BY event_type, gap_idx"""
-
-  /** TF.qualityScore replayed in SQL (same expression as the q29 oracle). */
-  private val QUALITY_SQL =
-    """(CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / CAST(length(text) AS DOUBLE)) * 0.5 + (((length(' ' || lower(text) || ' ') - length(replace(' ' || lower(text) || ' ', ' the ', ' '))) / 4 + (length(' ' || lower(text) || ' ') - length(replace(' ' || lower(text) || ' ', ' a ', ' '))) / 2 + (length(' ' || lower(text) || ' ') - length(replace(' ' || lower(text) || ' ', ' and ', ' '))) / 4 + (length(' ' || lower(text) || ' ') - length(replace(' ' || lower(text) || ' ', ' of ', ' '))) / 3) / CAST(array_length(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS DOUBLE)) * 0.5"""
-
-  /** Shared prelude: per-doc word-hash list + word count. */
-  private val DOC_HASHES =
-    "SELECT doc_id, list_transform(docwords(text), w -> xshash(w)) AS h, len(docwords(text)) AS n FROM documents"
-
-  def oracleSql: Map[String, String] = {
-    val m = baseOracleSql
-    // the persisted-index query path must reproduce the build-and-query
-    // path bit for bit, so it shares q40's oracle verbatim; the streamed
-    // bitmap store must equal the batch-built one (bit_or commutes), so
-    // q200 shares q189's
-    m + ("q150_ivf_index" -> m("q40_ann_ivf")) +
-      ("q200_stream_bitmap" -> m("q189_sliding_bitmap")) +
-      // the shingle index is a pure function of the docs: the drained
-      // census+islands IS batch q527; min/max lifetime merging commutes:
-      // the drained log-rank IS batch q520
-      ("q530_stream_repeated_spans" -> m("q527_repeated_spans")) +
-      ("q531_stream_logrank" -> m("q520_logrank")) +
-      // group moments add: the drained shrinkage IS batch q538; value
-      // censuses add: the drained transport distance IS batch q541
-      ("q540_stream_james_stein" -> m("q538_james_stein")) +
-      ("q542_stream_wasserstein" -> m("q541_wasserstein")) +
-      // joint censuses add and marginals derive from the joint: the
-      // drained association IS batch q544
-      ("q545_stream_theils_u" -> m("q544_theils_u")) +
-      // value censuses add: the drained shift IS batch q548; per-user
-      // totals add under the exactly-once tag: the drained CUPED IS q395
-      ("q549_stream_hodges_lehmann" -> m("q548_hodges_lehmann")) +
-      ("q550_stream_cuped" -> m("q395_cuped")) +
-      // per-stratum moments add: the drained causal readout IS batch q551
-      ("q553_stream_strata_att" -> m("q551_strata_att")) +
-      // hourly censuses add: the drained per-key slopes ARE batch q147
-      ("q555_stream_trend_ols" -> m("q147_trend_ols")) +
-      // hourly censuses add; the drained dense-spine AR(2) IS batch q657
-      ("q662_stream_yule_walker" -> m("q657_yule_walker")) +
-      // same drained census; the dense-spine MA(1) IS batch q671
-      ("q676_stream_ma1" -> m("q671_ma1_fit")) +
-      // same drained census; the staffing table IS batch q682
-      ("q684_stream_erlang" -> m("q682_erlang_staffing")) +
-      // QI-class counts add: the drained sweep IS batch q557
-      ("q562_stream_kanon" -> m("q557_kanon_sweep")) +
-      // 2×2 cells add: the drained effect sizes ARE batch q563; (x, y)
-      // censuses add: the drained gamma/Somers' D IS batch q566
-      ("q572_stream_prop_effects" -> m("q563_prop_effects")) +
-      ("q573_stream_gk_gamma" -> m("q566_gk_gamma")) +
-      // (group, unit) censuses add: the drained Hill profile IS batch q568
-      ("q579_stream_hill" -> m("q568_hill_numbers")) +
-      // entity-partitioned batches: per-batch paired censuses add, the
-      // drained symmetry test IS batch q580
-      ("q585_stream_bowker" -> m("q580_bowker")) +
-      // hour-partitioned batches: block maxima MAX-merge, the drained
-      // Gumbel fit IS batch q589
-      ("q595_stream_gumbel" -> m("q589_gumbel_maxima")) +
-      // 2×2 cells add: the drained equivalence verdict IS batch q600
-      ("q603_stream_tost" -> m("q600_tost_equivalence")) +
-      // daily subgroup partials add: the drained chart IS batch q592
-      ("q610_stream_pchart" -> m("q592_p_chart")) +
-      // slot censuses add: the drained rhythm readout IS batch q602
-      ("q612_stream_circular" -> m("q602_circular_stats")) +
-      // (rater, item) score partials add: the drained W IS batch q618
-      ("q620_stream_kendall_w" -> m("q618_kendall_w")) +
-      // (segment, outcome) cells add: the drained screen IS batch q621
-      ("q623_stream_dispro" -> m("q621_disproportionality")) +
-      // (group, value) censuses add: the drained deciles ARE batch q626
-      ("q633_stream_lorenz" -> m("q626_lorenz_curve")) +
-      // interval totals and boundary deltas add: the drained sweep IS
-      // batch q635
-      ("q636_stream_concurrency" -> m("q635_concurrency")) +
-      // entity-partitioned batches: cohort censuses add, the drained
-      // curves ARE batch q642
-      ("q644_stream_ltv" -> m("q642_ltv_curve")) +
-      // entity-partitioned batches: age/lifespan censuses add, the
-      // drained curve IS batch q646
-      ("q647_stream_mcf" -> m("q646_mcf")) +
-      // unit rows: (z, x) cells add under any batching, the drained
-      // Wald IS batch q650
-      ("q653_stream_iv" -> m("q650_iv_wald")) +
-      ("q207_pq_index" -> m("q188_pq_ann"))
-  }
-
-  private def baseOracleSql: Map[String, String] = Map(
-    "q01_bronze_flatten" ->
-      """SELECT event_id, date_trunc('second', ts) AS ts_sec, user_id, event_type, value, CAST(regexp_extract(props, '"k": ([0-9]+)', 1) AS INTEGER) AS k, strftime(ts, '%Y-%m-%d') AS date_id FROM events ORDER BY event_id""",
-    // cell census, per-x best, one strict-dominance sweep over the
-    // distinct-x domain
-    "q654_skyline" ->
-      """WITH q AS (SELECT l_partkey, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty FROM lineitem GROUP BY 1), f AS (SELECT p_partkey AS id, CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS x, qty AS y FROM part JOIN q ON p_partkey = l_partkey), cells AS (SELECT x, y, CAST(COUNT(*) AS BIGINT) AS n_members, MIN(id) AS exemplar FROM f GROUP BY 1, 2), bx AS (SELECT x, y, n_members, exemplar FROM (SELECT c.*, MAX(y) OVER (PARTITION BY x) AS ymax FROM cells c) WHERE y = ymax), sw AS (SELECT x, y, n_members, exemplar, MAX(y) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS bc FROM bx) SELECT x, y, n_members, exemplar FROM sw WHERE bc IS NULL OR y > bc ORDER BY x""",
-    // per-unit exact moments, pinned within-contributions summed as
-    // decimals, the pooled slope beside the within slope
-    "q655_fixed_effects" ->
-      """WITH e AS (SELECT user_id AS u, CASE WHEN epoch_ns(ts) // 1000000000 // 3600 % 24 < 6 THEN 1 ELSE 0 END AS x, CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS y FROM events), per AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS ni, SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(y AS DECIMAL(38,0))) AS sy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS sxy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))) AS sxx, SUM(CAST(y AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS syy FROM e GROUP BY 1), w AS (SELECT ni, sx, sy, sxy, sxx, syy, CAST(round(CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(ni AS DOUBLE), 9) AS DECIMAL(28,9)) AS wxy, CAST(round(CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / CAST(ni AS DOUBLE), 9) AS DECIMAL(28,9)) AS wxx, CAST(round(CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(ni AS DOUBLE), 9) AS DECIMAL(28,9)) AS wyy FROM per), f AS (SELECT CAST(SUM(ni) AS BIGINT) AS n, CAST(COUNT(*) AS BIGINT) AS k, SUM(wxy) AS wxy, SUM(wxx) AS wxx, SUM(wyy) AS wyy, SUM(sx) AS tsx, SUM(sy) AS tsy, SUM(sxy) AS tsxy, SUM(sxx) AS tsxx FROM w), g AS (SELECT *, CAST(wxy AS DOUBLE) / CAST(wxx AS DOUBLE) AS beta, CAST(wyy AS DOUBLE) - CAST(wxy AS DOUBLE) * CAST(wxy AS DOUBLE) / CAST(wxx AS DOUBLE) AS sse, CAST(n AS DOUBLE) - CAST(k AS DOUBLE) - 1.0 AS dfree FROM f), h AS (SELECT *, sse / dfree / CAST(wxx AS DOUBLE) AS varb, CAST(n AS DOUBLE) * CAST(tsxx AS DOUBLE) - CAST(tsx AS DOUBLE) * CAST(tsx AS DOUBLE) AS cxxp, CAST(n AS DOUBLE) * CAST(tsxy AS DOUBLE) - CAST(tsx AS DOUBLE) * CAST(tsy AS DOUBLE) AS cxyp FROM g) SELECT n, k AS k_units, CASE WHEN CAST(wxx AS DOUBLE) > 0.0 AND sse > 0.0 AND dfree > 0.0 THEN round(beta, 6) END AS beta_within, CASE WHEN CAST(wxx AS DOUBLE) > 0.0 AND sse > 0.0 AND dfree > 0.0 THEN round(sqrt(varb), 6) END AS se_within, CASE WHEN CAST(wxx AS DOUBLE) > 0.0 AND sse > 0.0 AND dfree > 0.0 THEN round(beta / sqrt(varb), 6) END AS t_within, CASE WHEN cxxp > 0.0 THEN round(cxyp / cxxp, 6) END AS beta_pooled FROM h""",
-    // per-group fits, the gap split priced at B's coefficients, parts
-    // summing to the gap by construction
-    "q656_oaxaca" ->
-      """WITH spend AS (SELECT o_custkey, CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sp FROM orders GROUP BY 1), c AS (SELECT c_mktsegment = 'BUILDING' AS isa, CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS x, COALESCE(sp, 0) AS y FROM customer LEFT JOIN spend ON c_custkey = o_custkey WHERE c_mktsegment IN ('BUILDING', 'MACHINERY')), mom AS (SELECT isa, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(y AS DECIMAL(38,0))) AS sy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS sxy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))) AS sxx FROM c GROUP BY 1 HAVING COUNT(*) >= 3), ft AS (SELECT isa, n, CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) > 0.0 THEN round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 9) END AS beta, round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 9) AS xbar, round(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE), 9) AS ybar FROM mom), a AS (SELECT n AS n_a, beta AS beta_a, xbar AS xbar_a, ybar AS ybar_a FROM ft WHERE isa), b AS (SELECT n AS n_b, beta AS beta_b, xbar AS xbar_b, ybar AS ybar_b FROM ft WHERE NOT isa) SELECT n_a, n_b, round(beta_a, 6) AS beta_a, round(beta_b, 6) AS beta_b, round(ybar_a - ybar_b, 6) AS gap, CASE WHEN beta_a IS NOT NULL AND beta_b IS NOT NULL THEN round((xbar_a - xbar_b) * beta_b, 6) END AS explained, CASE WHEN beta_a IS NOT NULL AND beta_b IS NOT NULL THEN round(ybar_a - ybar_b - (xbar_a - xbar_b) * beta_b, 6) END AS unexplained, CASE WHEN beta_a IS NOT NULL AND beta_b IS NOT NULL AND abs(ybar_a - ybar_b) > 0.0 THEN round((xbar_a - xbar_b) * beta_b / (ybar_a - ybar_b), 6) END AS share_explained FROM a, b""",
-    // dense spine, exact integer lag-product sums, pinned rho's, the
-    // closed-form phi pair, re-pinned sigma2 and one-step forecast
-    "q657_yule_walker" ->
-      """WITH h AS (SELECT event_type AS k, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hid FROM events), b AS (SELECT MIN(hid) AS lo, MAX(hid) AS hi FROM h), sp AS (SELECT CAST(unnest(range((SELECT lo FROM b), (SELECT hi FROM b) + 1)) AS BIGINT) AS hid), ty AS (SELECT DISTINCT k FROM h), cen AS (SELECT k, hid, CAST(COUNT(*) AS BIGINT) AS v FROM h GROUP BY 1, 2), fr AS MATERIALIZED (SELECT ty.k, sp.hid AS bb, COALESCE(cen.v, 0) AS v FROM ty CROSS JOIN sp LEFT JOIN cen ON cen.k = ty.k AND cen.hid = sp.hid), led AS (SELECT k, bb, v, LEAD(v, 1) OVER (PARTITION BY k ORDER BY bb) AS w1, LEAD(v, 2) OVER (PARTITION BY k ORDER BY bb) AS w2 FROM fr), cn AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(v) AS BIGINT) AS sv, CAST(SUM(v * v) AS BIGINT) AS svv, CAST(SUM(CASE WHEN w1 IS NOT NULL THEN v * w1 ELSE 0 END) AS BIGINT) AS svw1, CAST(SUM(CASE WHEN w1 IS NOT NULL THEN v ELSE 0 END) AS BIGINT) AS sh1, CAST(SUM(COALESCE(w1, 0)) AS BIGINT) AS st1, CAST(SUM(CASE WHEN w1 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS nk1, CAST(SUM(CASE WHEN w2 IS NOT NULL THEN v * w2 ELSE 0 END) AS BIGINT) AS svw2, CAST(SUM(CASE WHEN w2 IS NOT NULL THEN v ELSE 0 END) AS BIGINT) AS sh2, CAST(SUM(COALESCE(w2, 0)) AS BIGINT) AS st2, CAST(SUM(CASE WHEN w2 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS nk2 FROM led GROUP BY 1 HAVING COUNT(*) >= 5), lt AS (SELECT k, MAX(CASE WHEN rn = 1 THEN v END) AS v_last, MAX(CASE WHEN rn = 2 THEN v END) AS v_prev FROM (SELECT k, v, ROW_NUMBER() OVER (PARTITION BY k ORDER BY bb DESC) AS rn FROM fr) WHERE rn <= 2 GROUP BY 1), rw AS (SELECT cn.k AS k, n, v_last, v_prev, CAST(sv AS DOUBLE) / CAST(n AS DOUBLE) AS mr, CAST(svv AS DOUBLE) / CAST(n AS DOUBLE) - mr * mr AS c0r, (CAST(svw1 AS DOUBLE) - mr * (CAST(sh1 AS DOUBLE) + CAST(st1 AS DOUBLE)) + CAST(nk1 AS DOUBLE) * mr * mr) / CAST(n AS DOUBLE) AS c1r, (CAST(svw2 AS DOUBLE) - mr * (CAST(sh2 AS DOUBLE) + CAST(st2 AS DOUBLE)) + CAST(nk2 AS DOUBLE) * mr * mr) / CAST(n AS DOUBLE) AS c2r FROM cn JOIN lt ON cn.k = lt.k), stg AS (SELECT k, n, v_last, v_prev, round(mr, 9) AS m, round(c0r, 9) AS c0, CASE WHEN c0r > 0.0 THEN round(c1r / c0r, 9) END AS r1, CASE WHEN c0r > 0.0 THEN round(c2r / c0r, 9) END AS r2 FROM rw), ph AS (SELECT k, n, v_last, v_prev, m, c0, r1, r2, r1 * (1.0 - r2) / (1.0 - r1 * r1) AS p1, (r2 - r1 * r1) / (1.0 - r1 * r1) AS p2, (r1 IS NOT NULL AND 1.0 - r1 * r1 <> 0.0) AS ok FROM stg) SELECT k AS event_type, n, round(m, 6) AS mean, CASE WHEN ok THEN round(p1, 6) + 0.0 END AS phi1, CASE WHEN ok THEN round(p2, 6) + 0.0 END AS phi2, CASE WHEN ok THEN round(c0 * (1.0 - p1 * r1 - p2 * r2), 6) + 0.0 END AS sigma2, CASE WHEN ok THEN round(m + p1 * (CAST(v_last AS DOUBLE) - m) + p2 * (CAST(v_prev AS DOUBLE) - m), 6) + 0.0 END AS forecast_next FROM ph ORDER BY event_type""",
-    // dense spine, two naive forecasts as lags, pinned loss
-    // differential grid, Bartlett-weighted decimal lag sums, one
-    // pinned studentization
-    "q658_diebold_mariano" ->
-      """WITH h AS (SELECT event_type AS k, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hid FROM events), b AS (SELECT MIN(hid) AS lo, MAX(hid) AS hi FROM h), sp AS (SELECT CAST(unnest(range((SELECT lo FROM b), (SELECT hi FROM b) + 1)) AS BIGINT) AS hid), ty AS (SELECT DISTINCT k FROM h), cen AS (SELECT k, hid, CAST(COUNT(*) AS BIGINT) AS v FROM h GROUP BY 1, 2), fr AS (SELECT ty.k, sp.hid AS bb, COALESCE(cen.v, 0) AS v FROM ty CROSS JOIN sp LEFT JOIN cen ON cen.k = ty.k AND cen.hid = sp.hid), lg AS (SELECT k, bb, v, LAG(v, 1) OVER (PARTITION BY k ORDER BY bb) AS f1, LAG(v, 24) OVER (PARTITION BY k ORDER BY bb) AS f2 FROM fr), dd AS (SELECT k, bb, round((CAST(v AS DOUBLE) - CAST(f1 AS DOUBLE)) * (CAST(v AS DOUBLE) - CAST(f1 AS DOUBLE)) - (CAST(v AS DOUBLE) - CAST(f2 AS DOUBLE)) * (CAST(v AS DOUBLE) - CAST(f2 AS DOUBLE)), 9) AS d FROM lg WHERE f1 IS NOT NULL AND f2 IS NOT NULL), led AS (SELECT k, bb, d, LEAD(d, 1) OVER (PARTITION BY k ORDER BY bb) AS d1, LEAD(d, 2) OVER (PARTITION BY k ORDER BY bb) AS d2, LEAD(d, 3) OVER (PARTITION BY k ORDER BY bb) AS d3 FROM dd), cn AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(d AS DECIMAL(28,9))) AS sd, SUM(CAST(round(d * d, 9) AS DECIMAL(28,9))) AS sdd, SUM(CAST(CASE WHEN d1 IS NOT NULL THEN round(d * d1, 9) ELSE 0.0 END AS DECIMAL(28,9))) AS sx1, SUM(CAST(CASE WHEN d1 IS NOT NULL THEN d ELSE 0.0 END AS DECIMAL(28,9))) AS sa1, SUM(CAST(COALESCE(d1, 0.0) AS DECIMAL(28,9))) AS sb1, CAST(SUM(CASE WHEN d1 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS nl1, SUM(CAST(CASE WHEN d2 IS NOT NULL THEN round(d * d2, 9) ELSE 0.0 END AS DECIMAL(28,9))) AS sx2, SUM(CAST(CASE WHEN d2 IS NOT NULL THEN d ELSE 0.0 END AS DECIMAL(28,9))) AS sa2, SUM(CAST(COALESCE(d2, 0.0) AS DECIMAL(28,9))) AS sb2, CAST(SUM(CASE WHEN d2 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS nl2, SUM(CAST(CASE WHEN d3 IS NOT NULL THEN round(d * d3, 9) ELSE 0.0 END AS DECIMAL(28,9))) AS sx3, SUM(CAST(CASE WHEN d3 IS NOT NULL THEN d ELSE 0.0 END AS DECIMAL(28,9))) AS sa3, SUM(CAST(COALESCE(d3, 0.0) AS DECIMAL(28,9))) AS sb3, CAST(SUM(CASE WHEN d3 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS nl3 FROM led GROUP BY 1 HAVING COUNT(*) >= 8), g AS (SELECT k, n, CAST(sd AS DOUBLE) / CAST(n AS DOUBLE) AS dbar, CAST(sdd AS DOUBLE) / CAST(n AS DOUBLE) - (CAST(sd AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sd AS DOUBLE) / CAST(n AS DOUBLE)) AS g0, (CAST(sx1 AS DOUBLE) - dbar * (CAST(sa1 AS DOUBLE) + CAST(sb1 AS DOUBLE)) + CAST(nl1 AS DOUBLE) * dbar * dbar) / CAST(n AS DOUBLE) AS g1, (CAST(sx2 AS DOUBLE) - dbar * (CAST(sa2 AS DOUBLE) + CAST(sb2 AS DOUBLE)) + CAST(nl2 AS DOUBLE) * dbar * dbar) / CAST(n AS DOUBLE) AS g2, (CAST(sx3 AS DOUBLE) - dbar * (CAST(sa3 AS DOUBLE) + CAST(sb3 AS DOUBLE)) + CAST(nl3 AS DOUBLE) * dbar * dbar) / CAST(n AS DOUBLE) AS g3 FROM cn), f AS (SELECT k, n, dbar, g0 + 1.5 * g1 + 1.0 * g2 + 0.5 * g3 AS lrv FROM g) SELECT k AS event_type, n, round(dbar, 6) + 0.0 AS mean_loss_diff, round(lrv, 6) + 0.0 AS lrv, CASE WHEN lrv > 0.0 THEN round(dbar / sqrt(lrv / CAST(n AS DOUBLE)), 6) + 0.0 END AS dm_stat, CASE WHEN lrv > 0.0 THEN abs(dbar / sqrt(lrv / CAST(n AS DOUBLE))) > 1.96 END AS significant_95 FROM f ORDER BY event_type""",
-    // value census, slice-median init at exact discrete ranks, three
-    // unrolled Lloyd rounds (argmin assignment with smallest-index
-    // ties, decimal centroid updates pinned at 1e-9), grid-exact WSS
-    "q659_kmeans" ->
-      s"""WITH $kmeansPrefixSql SELECT CAST(cluster AS BIGINT) AS cluster, CAST(SUM(n) AS BIGINT) AS n, round(MAX(c), 6) + 0.0 AS centroid, CAST(SUM(CAST(v * 1000000000 - CAST(round(c * 1e9, 0) AS BIGINT) AS HUGEINT) * CAST(v * 1000000000 - CAST(round(c * 1e9, 0) AS BIGINT) AS HUGEINT) * CAST(n AS HUGEINT)) AS DOUBLE) / 1e18 + 0.0 AS wss FROM asgf GROUP BY 1 ORDER BY 1""",
-    // the kmeans assignment's per-cluster prefix sums give every
-    // pairwise distance sum; pinned a/b sides, grid silhouettes,
-    // per-cluster weighted mean
-    "q666_silhouette" ->
-      s"""WITH $kmeansPrefixSql, tots AS (SELECT cluster, CAST(SUM(n) AS BIGINT) AS ct, SUM(CAST(v AS HUGEINT) * CAST(n AS HUGEINT)) AS st FROM asgf GROUP BY 1), kk AS (SELECT ${(0 to 3).map(j => s"COALESCE((SELECT ct FROM tots WHERE cluster = $j), 0) AS ct$j, COALESCE((SELECT st FROM tots WHERE cluster = $j), CAST(0 AS HUGEINT)) AS st$j").mkString(", ")}), pre AS (SELECT v, n, cluster, ${(0 to 3).map(j => s"SUM(CASE WHEN cluster = $j THEN CAST(n AS HUGEINT) ELSE CAST(0 AS HUGEINT) END) OVER w AS cb$j, SUM(CASE WHEN cluster = $j THEN CAST(v AS HUGEINT) * CAST(n AS HUGEINT) ELSE CAST(0 AS HUGEINT) END) OVER w AS sb$j").mkString(", ")} FROM asgf WINDOW w AS (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), ds AS (SELECT v, n, cluster, ${(0 to 3).map(j => s"CAST(v AS HUGEINT) * cb$j - sb$j + (st$j - sb$j) - CAST(v AS HUGEINT) * (CAST(ct$j AS HUGEINT) - cb$j) AS d$j").mkString(", ")}, ${(0 to 3).map(j => s"ct$j").mkString(", ")} FROM pre, kk), ab AS (SELECT v, n, cluster, CASE ${(0 to 3).map(j => s"WHEN cluster = $j THEN CASE WHEN ct$j > 1 THEN round(CAST(d$j AS DOUBLE) / CAST(ct$j - 1 AS DOUBLE), 9) END").mkString(" ")} END AS a, least(${(0 to 3).map(j => s"CASE WHEN cluster <> $j AND ct$j > 0 THEN round(CAST(d$j AS DOUBLE) / CAST(ct$j AS DOUBLE), 9) END").mkString(", ")}) AS b FROM ds), sil AS (SELECT v, n, cluster, CASE WHEN a IS NULL OR b IS NULL THEN 0.0 WHEN greatest(a, b) = 0.0 THEN 0.0 ELSE round((b - a) / greatest(a, b), 9) END AS s FROM ab) SELECT CAST(cluster AS BIGINT) AS cluster, CAST(SUM(n) AS BIGINT) AS n, round(CAST(SUM(CAST(s AS DECIMAL(10,9)) * CAST(n AS DECIMAL(19,0))) AS DOUBLE) / CAST(SUM(n) AS DOUBLE), 6) + 0.0 AS mean_silhouette FROM sil GROUP BY 1 ORDER BY 1""",
-    // shared census, five k-parametrized Lloyd chains, the WSS curve's
-    // discrete-curvature knee with smallest-k ties
-    "q667_kmeans_elbow" ->
-      s"""WITH cen AS MATERIALIZED (SELECT CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS n FROM customer GROUP BY 1), tot AS (SELECT CAST(SUM(n) AS BIGINT) AS nt FROM cen), cum AS MATERIALIZED (SELECT v, n, SUM(n) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM cen), ${(2 to 6).map(kmeansChainSqlK).mkString(", ")}, allw AS (${(2 to 6).map(k => s"SELECT * FROM wss_k$k").mkString(" UNION ALL ")}), kn AS (SELECT a.k, a.wss, CASE WHEN p.wss IS NOT NULL AND nx.wss IS NOT NULL THEN (p.wss + nx.wss) - 2.0 * a.wss END AS d2 FROM allw a LEFT JOIN allw p ON p.k = a.k - 1 LEFT JOIN allw nx ON nx.k = a.k + 1) SELECT CAST(k AS BIGINT) AS k, wss + 0.0 AS total_wss, CASE WHEN d2 IS NOT NULL THEN d2 + 0.0 END AS curvature, k = (SELECT MIN(k) FROM kn WHERE d2 = (SELECT MAX(d2) FROM kn)) AS is_knee FROM kn ORDER BY k""",
-    // census median/MAD at exact discrete ranks, 4 unrolled IRLS
-    // rounds with the weight as the only pinned double
-    "q668_huber_location" ->
-      s"""WITH hcen AS MATERIALIZED (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v, CAST(COUNT(*) AS BIGINT) AS n FROM orders GROUP BY 1), htot AS (SELECT CAST(SUM(n) AS BIGINT) AS nt, SUM(CAST(v * n AS DECIMAL(38,0))) AS sv FROM hcen), hmed AS (SELECT MIN(v) AS med FROM (SELECT v, SUM(n) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM hcen) WHERE cum >= ((SELECT nt FROM htot) + 1) // 2), hmadc AS (SELECT abs(v - (SELECT med FROM hmed)) AS v, CAST(SUM(n) AS BIGINT) AS n FROM hcen GROUP BY 1), hmad AS (SELECT MIN(v) AS mad FROM (SELECT v, SUM(n) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM hmadc) WHERE cum >= ((SELECT nt FROM htot) + 1) // 2), hu0 AS (SELECT med, mad, CAST(med AS DOUBLE) AS mu, round(1.345 * (1.4826 * CAST(mad AS DOUBLE)), 9) AS c FROM hmed, hmad), ${(1 to 4).map(huberIterSql).mkString(", ")} SELECT nt AS n, med AS median, mad, CASE WHEN mad > 0 THEN c + 0.0 END AS c, CASE WHEN mad > 0 THEN round(mu, 6) + 0.0 ELSE CAST(med AS DOUBLE) + 0.0 END AS huber_mu, round(CAST(sv AS DOUBLE) / CAST(nt AS DOUBLE), 6) + 0.0 AS mean FROM hu4, htot""",
-    // the kmeans result's rms spreads and centroid gaps, max-ratio per
-    // cluster, one pinned mean
-    "q669_davies_bouldin" ->
-      s"""WITH $kmeansPrefixSql, km AS (SELECT CAST(cluster AS BIGINT) AS cluster, CAST(SUM(n) AS BIGINT) AS n, round(MAX(c), 6) + 0.0 AS centroid, CAST(SUM(CAST(v * 1000000000 - CAST(round(c * 1e9, 0) AS BIGINT) AS HUGEINT) * CAST(v * 1000000000 - CAST(round(c * 1e9, 0) AS BIGINT) AS HUGEINT) * CAST(n AS HUGEINT)) AS DOUBLE) / 1e18 + 0.0 AS wss FROM asgf GROUP BY 1), pr AS (SELECT a.cluster AS i, MAX(CASE WHEN abs(a.centroid - b.centroid) > 0.0 THEN round((round(sqrt(a.wss / CAST(a.n AS DOUBLE)), 9) + round(sqrt(b.wss / CAST(b.n AS DOUBLE)), 9)) / abs(a.centroid - b.centroid), 9) END) AS r FROM km a, km b WHERE a.cluster <> b.cluster GROUP BY 1) SELECT CAST(COUNT(*) AS BIGINT) AS k, round(CAST(SUM(CAST(r AS DECIMAL(28,9))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) + 0.0 AS db_index FROM pr""",
-    // one exact moment pass, pinned covariances, closed-form 2x2 eigen
-    // (trace/discriminant), unit axis with the sign pinned
-    "q660_pca" ->
-      """WITH sp AS (SELECT o_custkey, CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sp FROM orders GROUP BY 1), f AS (SELECT CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS x, COALESCE(sp, 0) AS y FROM customer LEFT JOIN sp ON c_custkey = o_custkey), mom AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(y AS DECIMAL(38,0))) AS sy, SUM(CAST(x * x AS DECIMAL(38,0))) AS sxx, SUM(CAST(y * y AS DECIMAL(38,0))) AS syy, SUM(CAST(x * y AS DECIMAL(38,0))) AS sxy FROM f), stg AS (SELECT n, round(CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE) - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)), 9) AS cxx, round(CAST(syy AS DOUBLE) / CAST(n AS DOUBLE) - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)), 9) AS cyy, round(CAST(sxy AS DOUBLE) / CAST(n AS DOUBLE) - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)), 9) AS cxy FROM mom), e AS (SELECT n, cxx, cyy, cxy, (cxx + cyy) / 2.0 + sqrt((cxx - cyy) * (cxx - cyy) / 4.0 + cxy * cxy) AS l1, (cxx + cyy) / 2.0 - sqrt((cxx - cyy) * (cxx - cyy) / 4.0 + cxy * cxy) AS l2 FROM stg), v AS (SELECT *, CASE WHEN cxy <> 0.0 THEN cxy ELSE CASE WHEN cxx >= cyy THEN 1.0 ELSE 0.0 END END AS vx0, CASE WHEN cxy <> 0.0 THEN l1 - cxx ELSE CASE WHEN cxx >= cyy THEN 0.0 ELSE 1.0 END END AS vy0 FROM e), w AS (SELECT *, sqrt(vx0 * vx0 + vy0 * vy0) AS nrm, CASE WHEN vx0 < 0.0 THEN -1.0 WHEN vx0 = 0.0 AND vy0 < 0.0 THEN -1.0 ELSE 1.0 END AS sgn, cxx + cyy > 0.0 AS ok FROM v) SELECT n, cxx + 0.0 AS var_x, cyy + 0.0 AS var_y, cxy + 0.0 AS cov_xy, CASE WHEN ok THEN round(l1, 6) + 0.0 END AS lambda1, CASE WHEN ok THEN round(l2, 6) + 0.0 END AS lambda2, CASE WHEN ok THEN round(l1 / (cxx + cyy), 6) + 0.0 END AS explained_share, CASE WHEN ok THEN round(sgn * vx0 / nrm, 6) + 0.0 END AS axis_x, CASE WHEN ok THEN round(sgn * vy0 / nrm, 6) + 0.0 END AS axis_y FROM w""",
-    // one exact moment pass, centered cross-moments in the shared
-    // double shape, Cramer's rule on the symmetric 3x3, R2 from the
-    // fitted inner product
-    "q661_ols3" ->
-      """WITH lc AS (SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS nl, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty FROM lineitem GROUP BY 1), f AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y, COALESCE(nl, 0) AS x1, COALESCE(qty, 0) AS x2, CASE WHEN substr(o_orderpriority, 1, 1) IN ('1', '2') THEN 1 ELSE 0 END AS x3 FROM orders LEFT JOIN lc ON o_orderkey = l_orderkey), mom AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(y AS DECIMAL(38,0))) AS s_y, SUM(CAST(x1 AS DECIMAL(38,0))) AS s_x1, SUM(CAST(x2 AS DECIMAL(38,0))) AS s_x2, SUM(CAST(x3 AS DECIMAL(38,0))) AS s_x3, SUM(CAST(y * y AS DECIMAL(38,0))) AS s_y_y, SUM(CAST(x1 * x1 AS DECIMAL(38,0))) AS s_x1_x1, SUM(CAST(x2 * x2 AS DECIMAL(38,0))) AS s_x2_x2, SUM(CAST(x3 * x3 AS DECIMAL(38,0))) AS s_x3_x3, SUM(CAST(x1 * x2 AS DECIMAL(38,0))) AS s_x1_x2, SUM(CAST(x1 * x3 AS DECIMAL(38,0))) AS s_x1_x3, SUM(CAST(x2 * x3 AS DECIMAL(38,0))) AS s_x2_x3, SUM(CAST(x1 * y AS DECIMAL(38,0))) AS s_x1_y, SUM(CAST(x2 * y AS DECIMAL(38,0))) AS s_x2_y, SUM(CAST(x3 * y AS DECIMAL(38,0))) AS s_x3_y FROM f), cm AS (SELECT n, CAST(s_y AS DOUBLE) AS dy, CAST(s_x1 AS DOUBLE) AS dx1, CAST(s_x2 AS DOUBLE) AS dx2, CAST(s_x3 AS DOUBLE) AS dx3, CAST(n AS DOUBLE) * CAST(s_x1_x1 AS DOUBLE) - CAST(s_x1 AS DOUBLE) * CAST(s_x1 AS DOUBLE) AS c11, CAST(n AS DOUBLE) * CAST(s_x2_x2 AS DOUBLE) - CAST(s_x2 AS DOUBLE) * CAST(s_x2 AS DOUBLE) AS c22, CAST(n AS DOUBLE) * CAST(s_x3_x3 AS DOUBLE) - CAST(s_x3 AS DOUBLE) * CAST(s_x3 AS DOUBLE) AS c33, CAST(n AS DOUBLE) * CAST(s_x1_x2 AS DOUBLE) - CAST(s_x1 AS DOUBLE) * CAST(s_x2 AS DOUBLE) AS c12, CAST(n AS DOUBLE) * CAST(s_x1_x3 AS DOUBLE) - CAST(s_x1 AS DOUBLE) * CAST(s_x3 AS DOUBLE) AS c13, CAST(n AS DOUBLE) * CAST(s_x2_x3 AS DOUBLE) - CAST(s_x2 AS DOUBLE) * CAST(s_x3 AS DOUBLE) AS c23, CAST(n AS DOUBLE) * CAST(s_x1_y AS DOUBLE) - CAST(s_x1 AS DOUBLE) * CAST(s_y AS DOUBLE) AS cy1, CAST(n AS DOUBLE) * CAST(s_x2_y AS DOUBLE) - CAST(s_x2 AS DOUBLE) * CAST(s_y AS DOUBLE) AS cy2, CAST(n AS DOUBLE) * CAST(s_x3_y AS DOUBLE) - CAST(s_x3 AS DOUBLE) * CAST(s_y AS DOUBLE) AS cy3, CAST(n AS DOUBLE) * CAST(s_y_y AS DOUBLE) - CAST(s_y AS DOUBLE) * CAST(s_y AS DOUBLE) AS cyy FROM mom), dt AS (SELECT *, c11 * (c22 * c33 - c23 * c23) - c12 * (c12 * c33 - c23 * c13) + c13 * (c12 * c23 - c22 * c13) AS det, cy1 * (c22 * c33 - c23 * c23) - c12 * (cy2 * c33 - c23 * cy3) + c13 * (cy2 * c23 - c22 * cy3) AS det1, c11 * (cy2 * c33 - c23 * cy3) - cy1 * (c12 * c33 - c23 * c13) + c13 * (c12 * cy3 - cy2 * c13) AS det2, c11 * (c22 * cy3 - c23 * cy2) - c12 * (c12 * cy3 - cy2 * c13) + cy1 * (c12 * c23 - c22 * c13) AS det3 FROM cm), g AS (SELECT *, det1 / det AS b1, det2 / det AS b2, det3 / det AS b3, det <> 0.0 AND cyy > 0.0 AND n >= 5 AS ok FROM dt) SELECT n, CASE WHEN ok THEN round(b1, 6) + 0.0 END AS beta1, CASE WHEN ok THEN round(b2, 6) + 0.0 END AS beta2, CASE WHEN ok THEN round(b3, 6) + 0.0 END AS beta3, CASE WHEN ok THEN round((dy - b1 * dx1 - b2 * dx2 - b3 * dx3) / CAST(n AS DOUBLE), 6) + 0.0 END AS intercept, CASE WHEN ok THEN round((b1 * cy1 + b2 * cy2 + b3 * cy3) / cyy, 6) + 0.0 END AS r2 FROM g""",
-    // pinned moments, closed-form 2x2 inverse, one covariance-aware
-    // scoring pass, top-20 by the pinned distance
-    "q663_mahalanobis" ->
-      """WITH sp AS (SELECT o_custkey, CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sp FROM orders GROUP BY 1), f AS (SELECT c_custkey AS id, CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS x, COALESCE(sp, 0) AS y FROM customer LEFT JOIN sp ON c_custkey = o_custkey), mom AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(y AS DECIMAL(38,0))) AS sy, SUM(CAST(x * x AS DECIMAL(38,0))) AS sxx, SUM(CAST(y * y AS DECIMAL(38,0))) AS syy, SUM(CAST(x * y AS DECIMAL(38,0))) AS sxy FROM f), st AS (SELECT round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 9) AS mx, round(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE), 9) AS my, round(CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE) - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)), 9) AS cxx, round(CAST(syy AS DOUBLE) / CAST(n AS DOUBLE) - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)), 9) AS cyy, round(CAST(sxy AS DOUBLE) / CAST(n AS DOUBLE) - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)), 9) AS cxy FROM mom) SELECT id, x, y, round((cyy * (CAST(x AS DOUBLE) - mx) * (CAST(x AS DOUBLE) - mx) - 2.0 * cxy * (CAST(x AS DOUBLE) - mx) * (CAST(y AS DOUBLE) - my) + cxx * (CAST(y AS DOUBLE) - my) * (CAST(y AS DOUBLE) - my)) / (cxx * cyy - cxy * cxy), 6) + 0.0 AS md2 FROM f, st ORDER BY md2 DESC, id LIMIT 20""",
-    // label census, one prefix window over the value domain, pinned
-    // Gini gain, lowest-value tie-break
-    "q664_decision_stump" ->
-      """WITH lab AS (SELECT CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS v, CASE WHEN EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'O') THEN 1 ELSE 0 END AS y FROM customer), cen AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(y) AS BIGINT) AS pos FROM lab GROUP BY 1), tot AS (SELECT CAST(SUM(n) AS BIGINT) AS nt, CAST(SUM(pos) AS BIGINT) AS pt FROM cen), pre0 AS (SELECT v, CAST(SUM(n) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS nl, CAST(SUM(pos) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS pl FROM cen), pre AS (SELECT v, nl, pl, nt, pt FROM pre0, tot WHERE nl < nt), sc AS (SELECT v, nl, pl, nt, pt, round((1.0 - (CAST(pt AS DOUBLE) / CAST(nt AS DOUBLE)) * (CAST(pt AS DOUBLE) / CAST(nt AS DOUBLE)) - ((CAST(nt AS DOUBLE) - CAST(pt AS DOUBLE)) / CAST(nt AS DOUBLE)) * ((CAST(nt AS DOUBLE) - CAST(pt AS DOUBLE)) / CAST(nt AS DOUBLE))) - (CAST(nl AS DOUBLE) / CAST(nt AS DOUBLE)) * (1.0 - (CAST(pl AS DOUBLE) / CAST(nl AS DOUBLE)) * (CAST(pl AS DOUBLE) / CAST(nl AS DOUBLE)) - ((CAST(nl AS DOUBLE) - CAST(pl AS DOUBLE)) / CAST(nl AS DOUBLE)) * ((CAST(nl AS DOUBLE) - CAST(pl AS DOUBLE)) / CAST(nl AS DOUBLE))) - (CAST(nt - nl AS DOUBLE) / CAST(nt AS DOUBLE)) * (1.0 - (CAST(pt - pl AS DOUBLE) / CAST(nt - nl AS DOUBLE)) * (CAST(pt - pl AS DOUBLE) / CAST(nt - nl AS DOUBLE)) - ((CAST(nt - nl AS DOUBLE) - CAST(pt - pl AS DOUBLE)) / CAST(nt - nl AS DOUBLE)) * ((CAST(nt - nl AS DOUBLE) - CAST(pt - pl AS DOUBLE)) / CAST(nt - nl AS DOUBLE))), 9) AS g FROM pre), best AS (SELECT * FROM sc ORDER BY g DESC, v LIMIT 1) SELECT v AS split, nt AS n, nl AS n_left, nt - nl AS n_right, round(CAST(pl AS DOUBLE) / CAST(nl AS DOUBLE), 6) + 0.0 AS pos_rate_left, round(CAST(pt - pl AS DOUBLE) / CAST(nt - nl AS DOUBLE), 6) + 0.0 AS pos_rate_right, round(1.0 - (CAST(pt AS DOUBLE) / CAST(nt AS DOUBLE)) * (CAST(pt AS DOUBLE) / CAST(nt AS DOUBLE)) - ((CAST(nt AS DOUBLE) - CAST(pt AS DOUBLE)) / CAST(nt AS DOUBLE)) * ((CAST(nt AS DOUBLE) - CAST(pt AS DOUBLE)) / CAST(nt AS DOUBLE)), 6) + 0.0 AS gini_root, g + 0.0 AS gain FROM best""",
-    // per-class exact scatter pinned at 1e-9, pooled 2x2 inverse in
-    // closed form, unit Fisher direction + the Mahalanobis gap
-    "q665_lda" ->
-      """WITH sp AS (SELECT o_custkey, CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT) AS sp FROM orders GROUP BY 1), f AS (SELECT CASE WHEN EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'O') THEN 1 ELSE 0 END AS g, CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS x, COALESCE(sp, 0) AS y FROM customer LEFT JOIN sp ON c_custkey = o_custkey), mom AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(y AS DECIMAL(38,0))) AS sy, SUM(CAST(x * x AS DECIMAL(38,0))) AS sxx, SUM(CAST(y * y AS DECIMAL(38,0))) AS syy, SUM(CAST(x * y AS DECIMAL(38,0))) AS sxy FROM f GROUP BY 1), stg AS (SELECT g, n, round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 9) AS mx, round(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE), 9) AS my, round(CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 9) AS wxx, round(CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE), 9) AS wyy, round(CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) / CAST(n AS DOUBLE), 9) AS wxy FROM mom), a AS (SELECT n AS n1, mx AS mx1, my AS my1, wxx AS wxx1, wyy AS wyy1, wxy AS wxy1 FROM stg WHERE g = 1), b AS (SELECT n AS n0, mx AS mx0, my AS my0, wxx AS wxx0, wyy AS wyy0, wxy AS wxy0 FROM stg WHERE g = 0), j AS (SELECT *, CAST(n1 AS DOUBLE) + CAST(n0 AS DOUBLE) - 2.0 AS dfree FROM a, b), p AS (SELECT *, (wxx1 + wxx0) / dfree AS pxx, (wyy1 + wyy0) / dfree AS pyy, (wxy1 + wxy0) / dfree AS pxy, mx1 - mx0 AS dmx, my1 - my0 AS dmy FROM j), q AS (SELECT *, pxx * pyy - pxy * pxy AS detp FROM p), r AS (SELECT *, (pyy * dmx - pxy * dmy) / detp AS wx0, (pxx * dmy - pxy * dmx) / detp AS wy0 FROM q), s AS (SELECT *, sqrt(wx0 * wx0 + wy0 * wy0) AS nrm, n1 >= 2 AND n0 >= 2 AND detp <> 0.0 AND dfree > 0.0 AND sqrt(wx0 * wx0 + wy0 * wy0) > 0.0 AS ok FROM r) SELECT n1, n0, CASE WHEN ok THEN round(wx0 / nrm, 6) + 0.0 END AS w_x, CASE WHEN ok THEN round(wy0 / nrm, 6) + 0.0 END AS w_y, CASE WHEN ok THEN round(dmx, 6) + 0.0 END AS gap_x, CASE WHEN ok THEN round(dmy, 6) + 0.0 END AS gap_y, CASE WHEN ok THEN round(wx0 * dmx + wy0 * dmy, 6) + 0.0 END AS fisher_separation FROM s""",
-    // dense week spine, exact integer moments, pinned MoM closed form,
-    // fitted-vs-observed zero share with exp pinned at 1e-12
-    "q670_zip_fit" ->
-      """WITH d AS (SELECT l_partkey, date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)) // 7 AS week, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty FROM lineitem GROUP BY 1, 2), b AS (SELECT MIN(week) AS lo, MAX(week) AS hi FROM d), cen AS (SELECT l_partkey, CAST((SELECT hi - lo + 1 FROM b) AS BIGINT) AS n, SUM(CAST(qty AS DECIMAL(38,0))) AS s, SUM(CAST(qty * qty AS DECIMAL(38,0))) AS ss, CAST((SELECT hi - lo + 1 FROM b) AS BIGINT) - COUNT(*) + CAST(SUM(CASE WHEN qty = 0 THEN 1 ELSE 0 END) AS BIGINT) AS z FROM d GROUP BY 1), g AS (SELECT l_partkey, n, z, s, round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE), 9) AS m, round((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)) / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)), 9) AS v FROM cen), h AS (SELECT *, round((v + m * m - m) / m, 9) AS lam FROM g), i AS (SELECT *, round(1.0 - m / lam, 9) AS pi, (s > 0 AND lam > m AND lam > 0.0) AS ok, round(exp(-lam), 12) AS ez FROM h) SELECT l_partkey, n, m + 0.0 AS mean, v + 0.0 AS variance, round(CAST(z AS DOUBLE) / CAST(n AS DOUBLE), 6) + 0.0 AS zero_share, CASE WHEN ok THEN round(pi, 6) + 0.0 END AS pi_hat, CASE WHEN ok THEN round(lam, 6) + 0.0 END AS lambda_hat, CASE WHEN ok THEN round(pi + (1.0 - pi) * ez, 6) + 0.0 END AS fit_zero_share FROM i ORDER BY l_partkey""",
-    // dense spine, lag-1 census, pinned rho1, invertible-root theta
-    // with sqrt guarded behind the |rho1| < 1/2 CASE
-    "q671_ma1_fit" ->
-      """WITH h AS (SELECT event_type AS k, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hid FROM events), b AS (SELECT MIN(hid) AS lo, MAX(hid) AS hi FROM h), sp AS (SELECT CAST(unnest(range((SELECT lo FROM b), (SELECT hi FROM b) + 1)) AS BIGINT) AS hid), ty AS (SELECT DISTINCT k FROM h), cen AS (SELECT k, hid, CAST(COUNT(*) AS BIGINT) AS v FROM h GROUP BY 1, 2), fr AS MATERIALIZED (SELECT ty.k, sp.hid AS bb, COALESCE(cen.v, 0) AS v FROM ty CROSS JOIN sp LEFT JOIN cen ON cen.k = ty.k AND cen.hid = sp.hid), led AS (SELECT k, bb, v, LEAD(v, 1) OVER (PARTITION BY k ORDER BY bb) AS w1 FROM fr), cn AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(v) AS BIGINT) AS sv, CAST(SUM(v * v) AS BIGINT) AS svv, CAST(SUM(CASE WHEN w1 IS NOT NULL THEN v * w1 ELSE 0 END) AS BIGINT) AS svw1, CAST(SUM(CASE WHEN w1 IS NOT NULL THEN v ELSE 0 END) AS BIGINT) AS sh1, CAST(SUM(COALESCE(w1, 0)) AS BIGINT) AS st1, CAST(SUM(CASE WHEN w1 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS nk1 FROM led GROUP BY 1 HAVING COUNT(*) >= 5), rw AS (SELECT k, n, CAST(sv AS DOUBLE) / CAST(n AS DOUBLE) AS mr, CAST(svv AS DOUBLE) / CAST(n AS DOUBLE) - (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) AS c0r, (CAST(svw1 AS DOUBLE) - (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sh1 AS DOUBLE) + CAST(st1 AS DOUBLE)) + CAST(nk1 AS DOUBLE) * (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE))) / CAST(n AS DOUBLE) AS c1r FROM cn), stg AS (SELECT k, n, round(mr, 9) AS m, round(c0r, 9) AS c0, CASE WHEN c0r > 0.0 THEN round(c1r / c0r, 9) END AS r1 FROM rw), th AS (SELECT k, n, m, c0, r1, CASE WHEN r1 IS NULL OR abs(r1) >= 0.5 THEN NULL WHEN r1 = 0.0 THEN 0.0 ELSE (1.0 - sqrt(1.0 - 4.0 * r1 * r1)) / (2.0 * r1) END AS t, (r1 IS NOT NULL AND abs(r1) < 0.5) AS inv FROM stg) SELECT k AS event_type, n, round(m, 6) AS mean, CASE WHEN r1 IS NOT NULL THEN round(r1, 6) + 0.0 END AS r1, CASE WHEN inv THEN round(t, 6) + 0.0 END AS theta, CASE WHEN inv THEN round(c0 / (1.0 + t * t), 6) + 0.0 END AS sigma2 FROM th ORDER BY event_type""",
-    // dense spine, lag-1/2 census, phi from the ACF decay, theta from
-    // the reciprocal-root quadratic with every sqrt CASE-guarded
-    "q672_arma11_fit" ->
-      """WITH h AS (SELECT event_type AS k, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hid FROM events), b AS (SELECT MIN(hid) AS lo, MAX(hid) AS hi FROM h), sp AS (SELECT CAST(unnest(range((SELECT lo FROM b), (SELECT hi FROM b) + 1)) AS BIGINT) AS hid), ty AS (SELECT DISTINCT k FROM h), cen AS (SELECT k, hid, CAST(COUNT(*) AS BIGINT) AS v FROM h GROUP BY 1, 2), fr AS MATERIALIZED (SELECT ty.k, sp.hid AS bb, COALESCE(cen.v, 0) AS v FROM ty CROSS JOIN sp LEFT JOIN cen ON cen.k = ty.k AND cen.hid = sp.hid), led AS (SELECT k, bb, v, LEAD(v, 1) OVER (PARTITION BY k ORDER BY bb) AS w1, LEAD(v, 2) OVER (PARTITION BY k ORDER BY bb) AS w2 FROM fr), cn AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(v) AS BIGINT) AS sv, CAST(SUM(v * v) AS BIGINT) AS svv, CAST(SUM(CASE WHEN w1 IS NOT NULL THEN v * w1 ELSE 0 END) AS BIGINT) AS svw1, CAST(SUM(CASE WHEN w1 IS NOT NULL THEN v ELSE 0 END) AS BIGINT) AS sh1, CAST(SUM(COALESCE(w1, 0)) AS BIGINT) AS st1, CAST(SUM(CASE WHEN w1 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS nk1, CAST(SUM(CASE WHEN w2 IS NOT NULL THEN v * w2 ELSE 0 END) AS BIGINT) AS svw2, CAST(SUM(CASE WHEN w2 IS NOT NULL THEN v ELSE 0 END) AS BIGINT) AS sh2, CAST(SUM(COALESCE(w2, 0)) AS BIGINT) AS st2, CAST(SUM(CASE WHEN w2 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS nk2 FROM led GROUP BY 1 HAVING COUNT(*) >= 6), rw AS (SELECT k, n, CAST(sv AS DOUBLE) / CAST(n AS DOUBLE) AS mr, CAST(svv AS DOUBLE) / CAST(n AS DOUBLE) - (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) AS c0r, (CAST(svw1 AS DOUBLE) - (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sh1 AS DOUBLE) + CAST(st1 AS DOUBLE)) + CAST(nk1 AS DOUBLE) * (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE))) / CAST(n AS DOUBLE) AS c1r, (CAST(svw2 AS DOUBLE) - (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sh2 AS DOUBLE) + CAST(st2 AS DOUBLE)) + CAST(nk2 AS DOUBLE) * (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE))) / CAST(n AS DOUBLE) AS c2r FROM cn), stg AS (SELECT k, n, round(mr, 9) AS m, round(c0r, 9) AS c0, CASE WHEN c0r > 0.0 THEN round(c1r / c0r, 9) END AS r1, CASE WHEN c0r > 0.0 THEN round(c2r / c0r, 9) END AS r2 FROM rw), ph AS (SELECT k, n, m, c0, r1, r2, CASE WHEN r1 IS NOT NULL AND r1 <> 0.0 THEN r2 / r1 END AS f FROM stg), qd AS (SELECT k, n, m, c0, r1, f, r1 - f AS qa, 2.0 * r1 * f - 1.0 - f * f AS qb FROM ph), dd AS (SELECT k, n, m, c0, r1, f, qa, qb, qb * qb - 4.0 * qa * qa AS disc FROM qd), tt AS (SELECT k, n, m, c0, f, qa, qb, disc, CASE WHEN f IS NULL THEN NULL WHEN qa = 0.0 THEN 0.0 WHEN disc >= 0.0 THEN (CASE WHEN abs((-qb - sqrt(disc)) / (2.0 * qa)) <= 1.0 THEN (-qb - sqrt(disc)) / (2.0 * qa) ELSE (-qb + sqrt(disc)) / (2.0 * qa) END) END AS t, (f IS NOT NULL AND abs(f) < 1.0 AND ((qa = 0.0 AND qb <> 0.0) OR (qa <> 0.0 AND disc >= 0.0))) AS ok FROM dd), sd AS (SELECT *, 1.0 + 2.0 * f * t + t * t AS sden FROM tt) SELECT k AS event_type, n, round(m, 6) AS mean, CASE WHEN ok THEN round(f, 6) + 0.0 END AS phi, CASE WHEN ok THEN round(t, 6) + 0.0 END AS theta, CASE WHEN ok AND sden > 0.0 THEN round(c0 * (1.0 - f * f) / sden, 6) + 0.0 END AS sigma2 FROM sd ORDER BY event_type""",
-    // duration census, median ranks exploded from cumulative counts,
-    // pinned ln grid, decimal OLS sums, exp-of-pinned scale
-    "q673_weibull_fit" ->
-      """WITH d AS (SELECT l_returnflag AS k, CAST(date_diff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE)) AS BIGINT) AS t FROM lineitem JOIN orders ON l_orderkey = o_orderkey WHERE date_diff('day', CAST(o_orderdate AS DATE), CAST(l_shipdate AS DATE)) >= 1), cen AS (SELECT k, t, CAST(COUNT(*) AS BIGINT) AS c FROM d GROUP BY 1, 2), cw AS (SELECT k, t, c, CAST(SUM(c) OVER (PARTITION BY k ORDER BY t) AS BIGINT) AS cum, CAST(SUM(c) OVER (PARTITION BY k) AS BIGINT) AS n FROM cen), rk AS (SELECT k, t, n, CAST(unnest(range(cum - c + 1, cum + 1)) AS BIGINT) AS i FROM cw), xy AS (SELECT k, t, n, round(ln(CAST(t AS DOUBLE)), 9) AS x, round(ln(-ln(1.0 - (CAST(i AS DOUBLE) - 0.3) / (CAST(n AS DOUBLE) + 0.4))), 9) AS y FROM rk), g AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n, CAST(COUNT(DISTINCT t) AS BIGINT) AS nd, SUM(CAST(x AS DECIMAL(28,9))) AS sx, SUM(CAST(y AS DECIMAL(28,9))) AS sy, SUM(CAST(round(x * x, 9) AS DECIMAL(28,9))) AS sxx, SUM(CAST(round(x * y, 9) AS DECIMAL(28,9))) AS sxy, SUM(CAST(round(y * y, 9) AS DECIMAL(28,9))) AS syy FROM xy GROUP BY 1 HAVING COUNT(*) >= 5), a AS (SELECT k, n, nd, CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd, CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS cxx, CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS cxy, CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS cyy FROM g), b2 AS (SELECT *, (nd >= 2 AND cxx > 0.0) AS ok, cxy / cxx AS shp FROM a) SELECT k AS l_returnflag, n, CASE WHEN ok THEN round(shp, 6) + 0.0 END AS shape, CASE WHEN ok AND shp > 0.0 THEN round(exp(-round((syd - shp * sxd) / CAST(n AS DOUBLE) / shp, 9)), 6) END AS scale, CASE WHEN ok AND cyy > 0.0 THEN round(cxy * cxy / (cxx * cyy), 6) + 0.0 END AS r2 FROM b2 ORDER BY l_returnflag""",
-    // bucketed pair sample, +/-1/sqrt(k) sign projection on the 1e-6
-    // grid, ordered list_reduce distance folds
-    "q683_random_projection" ->
-      s"""$VEC_MACROS; CREATE OR REPLACE MACRO pl2(a, b) AS list_reduce(list_transform(range(1, 65), i -> (CAST(a[i] AS DOUBLE) - CAST(b[i] AS DOUBLE)) * (CAST(a[i] AS DOUBLE) - CAST(b[i] AS DOUBLE))), (x, y) -> x + y); CREATE OR REPLACE MACRO pl2k(a, b) AS list_reduce(list_transform(range(1, 17), i -> (CAST(a[i] AS DOUBLE) - CAST(b[i] AS DOUBLE)) * (CAST(a[i] AS DOUBLE) - CAST(b[i] AS DOUBLE))), (x, y) -> x + y); WITH base AS (SELECT vec_id AS id, embedding AS v, [round(pdot(v, ${planeArr(1000)}) / 4.0, 6), round(pdot(v, ${planeArr(1001)}) / 4.0, 6), round(pdot(v, ${planeArr(1002)}) / 4.0, 6), round(pdot(v, ${planeArr(1003)}) / 4.0, 6), round(pdot(v, ${planeArr(1004)}) / 4.0, 6), round(pdot(v, ${planeArr(1005)}) / 4.0, 6), round(pdot(v, ${planeArr(1006)}) / 4.0, 6), round(pdot(v, ${planeArr(1007)}) / 4.0, 6), round(pdot(v, ${planeArr(1008)}) / 4.0, 6), round(pdot(v, ${planeArr(1009)}) / 4.0, 6), round(pdot(v, ${planeArr(1010)}) / 4.0, 6), round(pdot(v, ${planeArr(1011)}) / 4.0, 6), round(pdot(v, ${planeArr(1012)}) / 4.0, 6), round(pdot(v, ${planeArr(1013)}) / 4.0, 6), round(pdot(v, ${planeArr(1014)}) / 4.0, 6), round(pdot(v, ${planeArr(1015)}) / 4.0, 6)] AS y, CAST(concat('0x', substr(md5(concat('jl:', CAST(vec_id AS VARCHAR))), 1, 13)) AS BIGINT) % 41 AS bkt FROM embeddings), p AS (SELECT a.id AS id_a, b.id AS id_b, pl2(a.v, b.v) AS d2o, pl2k(a.y, b.y) AS d2p FROM base a JOIN base b ON a.bkt = b.bkt AND a.id < b.id) SELECT id_a, id_b, round(d2o, 6) AS d2_orig, round(d2p, 6) AS d2_proj, CASE WHEN d2o > 0.0 THEN round(d2p / d2o, 6) END AS ratio FROM p ORDER BY id_a, id_b""",
-    // dense spine load, closed-form Erlang-B prefix sums over the
-    // k-explode, pinned wait probabilities, min passing server count
-    "q682_erlang_staffing" ->
-      """WITH h AS (SELECT event_type AS k, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hid FROM events), b AS (SELECT MIN(hid) AS lo, MAX(hid) AS hi FROM h), sp AS (SELECT CAST(unnest(range((SELECT lo FROM b), (SELECT hi FROM b) + 1)) AS BIGINT) AS hid), ty AS (SELECT DISTINCT k FROM h), cen AS (SELECT k, hid, CAST(COUNT(*) AS BIGINT) AS v FROM h GROUP BY 1, 2), fr AS MATERIALIZED (SELECT ty.k, sp.hid AS bb, COALESCE(cen.v, 0) AS v FROM ty CROSS JOIN sp LEFT JOIN cen ON cen.k = ty.k AND cen.hid = sp.hid), ld AS MATERIALIZED (SELECT k, CAST(COUNT(*) AS BIGINT) AS hours, round(CAST(SUM(v) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) * (300.0 / 3600.0), 9) AS a FROM fr GROUP BY 1), tm AS (SELECT k, hours, a, CAST(unnest(range(0, 41)) AS BIGINT) AS kk FROM ld WHERE a > 0.0), lk AS (SELECT k, hours, a, kk, CASE WHEN kk = 0 THEN 0.0 ELSE round(ln(CAST(kk AS DOUBLE)), 12) END AS lnk FROM tm), lf AS (SELECT k, hours, a, kk, CAST(SUM(CAST(lnk AS DECIMAL(28,12))) OVER (PARTITION BY k ORDER BY kk) AS DOUBLE) AS lf FROM lk), tt AS (SELECT k, hours, a, kk, CAST(round(exp(CAST(kk AS DOUBLE) * round(ln(a), 9) - lf), 12) AS DECIMAL(28,12)) AS t FROM lf), ss AS (SELECT k, hours, a, kk, t, SUM(t) OVER (PARTITION BY k ORDER BY kk) AS s FROM tt), wv AS MATERIALIZED (SELECT k, hours, a, kk, round(CAST(kk AS DOUBLE) * (CAST(t AS DOUBLE) / CAST(s AS DOUBLE)) / (CAST(kk AS DOUBLE) - a * (1.0 - CAST(t AS DOUBLE) / CAST(s AS DOUBLE))), 9) AS w FROM ss WHERE kk >= 1 AND a < CAST(kk AS DOUBLE)), ck AS (SELECT k, MIN(kk) AS c_star FROM wv WHERE w <= 0.2 GROUP BY 1), cw AS (SELECT wv.k AS k, wv.kk AS kk, wv.w AS w FROM wv JOIN ck ON wv.k = ck.k AND wv.kk = ck.c_star) SELECT ld.k AS event_type, ld.hours, round(ld.a, 6) AS erlangs, cw.kk AS c_star, CASE WHEN cw.kk IS NOT NULL THEN round(cw.w, 6) END AS wait_prob, CASE WHEN cw.kk IS NOT NULL THEN round(ld.a / CAST(cw.kk AS DOUBLE), 6) END AS utilization FROM ld LEFT JOIN cw ON ld.k = cw.k ORDER BY event_type""",
-    // value census, exact rank-coefficient collapse, shared A&S
-    // polynomial, clamped pinned lns, decimal term sums
-    "q681_anderson_darling" ->
-      """WITH c AS (SELECT n_name AS k, CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS v FROM customer JOIN nation ON c_nationkey = n_nationkey), cen AS (SELECT k, v, CAST(COUNT(*) AS BIGINT) AS c FROM c GROUP BY 1, 2), mom AS (SELECT k, CAST(SUM(c) AS BIGINT) AS n, SUM(CAST(c AS DECIMAL(38,0)) * v) AS sv, SUM(CAST(c AS DECIMAL(38,0)) * v * v) AS svv FROM cen GROUP BY 1 HAVING SUM(c) >= 8), ky AS (SELECT k, n, CAST(sv AS DOUBLE) / CAST(n AS DOUBLE) AS mu, sqrt((CAST(n AS DOUBLE) * CAST(svv AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE)) / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) AS sd FROM mom WHERE (CAST(n AS DOUBLE) * CAST(svv AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE)) / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) > 0.0), rk AS (SELECT cen.k AS k, cen.v AS v, cen.c AS c, ky.n AS n, ky.mu AS mu, ky.sd AS sd, CAST(SUM(cen.c) OVER (PARTITION BY cen.k ORDER BY cen.v) AS BIGINT) AS cum FROM cen JOIN ky ON cen.k = ky.k), zz AS (SELECT k, n, c, cum - c AS a, round((CAST(v AS DOUBLE) - mu) / sd, 9) AS z FROM rk), pt AS (SELECT k, n, c, a, z, 1.0 / (1.0 + 0.2316419 * abs(z)) AS tt FROM zz), pv AS (SELECT k, n, c, a, z, 2.0 * 0.3989422804014327 * exp(-(abs(z) * abs(z)) / 2.0) * ((((1.330274429 * tt - 1.821255978) * tt + 1.781477937) * tt - 0.356563782) * tt + 0.319381530) * tt AS p FROM pt), ph AS (SELECT k, n, c, a, LEAST(GREATEST(CASE WHEN z >= 0.0 THEN 1.0 - p / 2.0 ELSE p / 2.0 END, 0.000000000001), 1.0 - 0.000000000001) AS phi, LEAST(GREATEST(CASE WHEN z >= 0.0 THEN p / 2.0 ELSE 1.0 - p / 2.0 END, 0.000000000001), 1.0 - 0.000000000001) AS sf FROM pv), tm AS (SELECT k, n, CAST(round(CAST(2 * c * a + c * c AS DOUBLE) * round(ln(phi), 9), 9) AS DECIMAL(28,9)) AS ta, CAST(round(CAST(2 * c * (n - a) - c * c AS DOUBLE) * round(ln(sf), 9), 9) AS DECIMAL(28,9)) AS tb FROM ph), ag AS (SELECT k, n, CAST(SUM(ta) AS DOUBLE) AS sa, CAST(SUM(tb) AS DOUBLE) AS sb FROM tm GROUP BY 1, 2) SELECT k AS n_name, n, round(-CAST(n AS DOUBLE) - (sa + sb) / CAST(n AS DOUBLE), 6) AS a2, round((-CAST(n AS DOUBLE) - (sa + sb) / CAST(n AS DOUBLE)) * (1.0 + 0.75 / CAST(n AS DOUBLE) + 2.25 / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))), 6) AS a2_star, (round((-CAST(n AS DOUBLE) - (sa + sb) / CAST(n AS DOUBLE)) * (1.0 + 0.75 / CAST(n AS DOUBLE) + 2.25 / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE))), 6) > 0.787) AS reject_normal_05 FROM ag ORDER BY n_name""",
-    // 4 unrolled EM rounds: pinned log-odds logistic E-steps over
-    // the value census, decimal M-step sums, floored variances
-    "q686_gmm_em" ->
-      """WITH cen AS MATERIALIZED (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 100 AS v, CAST(COUNT(*) AS BIGINT) AS n FROM orders GROUP BY 1), mm AS MATERIALIZED (SELECT CAST(SUM(n) AS BIGINT) AS n, SUM(CAST(v * n AS DECIMAL(38,0))) AS sv, SUM(CAST(n AS DECIMAL(38,0)) * v * v) AS svv FROM cen), cum AS (SELECT v, n, CAST(SUM(n) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM cen), p0 AS MATERIALIZED (SELECT mm.n AS n, 0.5 AS pi, (SELECT CAST(MIN(v) AS DOUBLE) FROM cum WHERE cum >= mm.n // 4 + 1) AS mu1, GREATEST(round(CAST(svv AS DOUBLE) / CAST(mm.n AS DOUBLE) - (CAST(sv AS DOUBLE) / CAST(mm.n AS DOUBLE)) * (CAST(sv AS DOUBLE) / CAST(mm.n AS DOUBLE)), 3), 0.000001) AS s1, (SELECT CAST(MIN(v) AS DOUBLE) FROM cum WHERE cum >= 3 * mm.n // 4 + 1) AS mu2, GREATEST(round(CAST(svv AS DOUBLE) / CAST(mm.n AS DOUBLE) - (CAST(sv AS DOUBLE) / CAST(mm.n AS DOUBLE)) * (CAST(sv AS DOUBLE) / CAST(mm.n AS DOUBLE)), 3), 0.000001) AS s2 FROM mm), r0 AS (SELECT cen.v AS v, cen.n AS n, CAST(round(1.0 / (1.0 + exp(LEAST(GREATEST(round(((ln(1.0 - p0.pi) - 0.5 * ln(p0.s2)) - (CAST(cen.v AS DOUBLE) - p0.mu2) * (CAST(cen.v AS DOUBLE) - p0.mu2) / (2.0 * p0.s2)) - ((ln(p0.pi) - 0.5 * ln(p0.s1)) - (CAST(cen.v AS DOUBLE) - p0.mu1) * (CAST(cen.v AS DOUBLE) - p0.mu1) / (2.0 * p0.s1)), 9), -700.0), 700.0))) * 1000000000000.0, 0) AS BIGINT) AS r1 FROM cen CROSS JOIN p0), g0 AS (SELECT SUM(CAST(r1 AS DECIMAL(38,0)) * n) AS w1, SUM(CAST(r1 AS DECIMAL(38,0)) * n * v) AS m1, SUM(CAST(r1 AS DECIMAL(38,0)) * n * v * v) AS q1, SUM(CAST(1000000000000 - r1 AS DECIMAL(38,0)) * n) AS w2, SUM(CAST(1000000000000 - r1 AS DECIMAL(38,0)) * n * v) AS m2, SUM(CAST(1000000000000 - r1 AS DECIMAL(38,0)) * n * v * v) AS q2 FROM r0), p1 AS MATERIALIZED (SELECT mm.n AS n, round(CAST(w1 AS DOUBLE) / (CAST(mm.n AS DOUBLE) * 1000000000000.0), 9) AS pi, round(CAST(m1 AS DOUBLE) / CAST(w1 AS DOUBLE), 9) AS mu1, GREATEST(round(CAST(q1 AS DOUBLE) / CAST(w1 AS DOUBLE) - round(CAST(m1 AS DOUBLE) / CAST(w1 AS DOUBLE), 9) * round(CAST(m1 AS DOUBLE) / CAST(w1 AS DOUBLE), 9), 3), 0.000001) AS s1, round(CAST(m2 AS DOUBLE) / CAST(w2 AS DOUBLE), 9) AS mu2, GREATEST(round(CAST(q2 AS DOUBLE) / CAST(w2 AS DOUBLE) - round(CAST(m2 AS DOUBLE) / CAST(w2 AS DOUBLE), 9) * round(CAST(m2 AS DOUBLE) / CAST(w2 AS DOUBLE), 9), 3), 0.000001) AS s2 FROM g0, mm), r1 AS (SELECT cen.v AS v, cen.n AS n, CAST(round(1.0 / (1.0 + exp(LEAST(GREATEST(round(((ln(1.0 - p1.pi) - 0.5 * ln(p1.s2)) - (CAST(cen.v AS DOUBLE) - p1.mu2) * (CAST(cen.v AS DOUBLE) - p1.mu2) / (2.0 * p1.s2)) - ((ln(p1.pi) - 0.5 * ln(p1.s1)) - (CAST(cen.v AS DOUBLE) - p1.mu1) * (CAST(cen.v AS DOUBLE) - p1.mu1) / (2.0 * p1.s1)), 9), -700.0), 700.0))) * 1000000000000.0, 0) AS BIGINT) AS r1 FROM cen CROSS JOIN p1), g1 AS (SELECT SUM(CAST(r1 AS DECIMAL(38,0)) * n) AS w1, SUM(CAST(r1 AS DECIMAL(38,0)) * n * v) AS m1, SUM(CAST(r1 AS DECIMAL(38,0)) * n * v * v) AS q1, SUM(CAST(1000000000000 - r1 AS DECIMAL(38,0)) * n) AS w2, SUM(CAST(1000000000000 - r1 AS DECIMAL(38,0)) * n * v) AS m2, SUM(CAST(1000000000000 - r1 AS DECIMAL(38,0)) * n * v * v) AS q2 FROM r1), p2 AS MATERIALIZED (SELECT mm.n AS n, round(CAST(w1 AS DOUBLE) / (CAST(mm.n AS DOUBLE) * 1000000000000.0), 9) AS pi, round(CAST(m1 AS DOUBLE) / CAST(w1 AS DOUBLE), 9) AS mu1, GREATEST(round(CAST(q1 AS DOUBLE) / CAST(w1 AS DOUBLE) - round(CAST(m1 AS DOUBLE) / CAST(w1 AS DOUBLE), 9) * round(CAST(m1 AS DOUBLE) / CAST(w1 AS DOUBLE), 9), 3), 0.000001) AS s1, round(CAST(m2 AS DOUBLE) / CAST(w2 AS DOUBLE), 9) AS mu2, GREATEST(round(CAST(q2 AS DOUBLE) / CAST(w2 AS DOUBLE) - round(CAST(m2 AS DOUBLE) / CAST(w2 AS DOUBLE), 9) * round(CAST(m2 AS DOUBLE) / CAST(w2 AS DOUBLE), 9), 3), 0.000001) AS s2 FROM g1, mm), r2 AS (SELECT cen.v AS v, cen.n AS n, CAST(round(1.0 / (1.0 + exp(LEAST(GREATEST(round(((ln(1.0 - p2.pi) - 0.5 * ln(p2.s2)) - (CAST(cen.v AS DOUBLE) - p2.mu2) * (CAST(cen.v AS DOUBLE) - p2.mu2) / (2.0 * p2.s2)) - ((ln(p2.pi) - 0.5 * ln(p2.s1)) - (CAST(cen.v AS DOUBLE) - p2.mu1) * (CAST(cen.v AS DOUBLE) - p2.mu1) / (2.0 * p2.s1)), 9), -700.0), 700.0))) * 1000000000000.0, 0) AS BIGINT) AS r1 FROM cen CROSS JOIN p2), g2 AS (SELECT SUM(CAST(r1 AS DECIMAL(38,0)) * n) AS w1, SUM(CAST(r1 AS DECIMAL(38,0)) * n * v) AS m1, SUM(CAST(r1 AS DECIMAL(38,0)) * n * v * v) AS q1, SUM(CAST(1000000000000 - r1 AS DECIMAL(38,0)) * n) AS w2, SUM(CAST(1000000000000 - r1 AS DECIMAL(38,0)) * n * v) AS m2, SUM(CAST(1000000000000 - r1 AS DECIMAL(38,0)) * n * v * v) AS q2 FROM r2), p3 AS MATERIALIZED (SELECT mm.n AS n, round(CAST(w1 AS DOUBLE) / (CAST(mm.n AS DOUBLE) * 1000000000000.0), 9) AS pi, round(CAST(m1 AS DOUBLE) / CAST(w1 AS DOUBLE), 9) AS mu1, GREATEST(round(CAST(q1 AS DOUBLE) / CAST(w1 AS DOUBLE) - round(CAST(m1 AS DOUBLE) / CAST(w1 AS DOUBLE), 9) * round(CAST(m1 AS DOUBLE) / CAST(w1 AS DOUBLE), 9), 3), 0.000001) AS s1, round(CAST(m2 AS DOUBLE) / CAST(w2 AS DOUBLE), 9) AS mu2, GREATEST(round(CAST(q2 AS DOUBLE) / CAST(w2 AS DOUBLE) - round(CAST(m2 AS DOUBLE) / CAST(w2 AS DOUBLE), 9) * round(CAST(m2 AS DOUBLE) / CAST(w2 AS DOUBLE), 9), 3), 0.000001) AS s2 FROM g2, mm), r3 AS (SELECT cen.v AS v, cen.n AS n, CAST(round(1.0 / (1.0 + exp(LEAST(GREATEST(round(((ln(1.0 - p3.pi) - 0.5 * ln(p3.s2)) - (CAST(cen.v AS DOUBLE) - p3.mu2) * (CAST(cen.v AS DOUBLE) - p3.mu2) / (2.0 * p3.s2)) - ((ln(p3.pi) - 0.5 * ln(p3.s1)) - (CAST(cen.v AS DOUBLE) - p3.mu1) * (CAST(cen.v AS DOUBLE) - p3.mu1) / (2.0 * p3.s1)), 9), -700.0), 700.0))) * 1000000000000.0, 0) AS BIGINT) AS r1 FROM cen CROSS JOIN p3), g3 AS (SELECT SUM(CAST(r1 AS DECIMAL(38,0)) * n) AS w1, SUM(CAST(r1 AS DECIMAL(38,0)) * n * v) AS m1, SUM(CAST(r1 AS DECIMAL(38,0)) * n * v * v) AS q1, SUM(CAST(1000000000000 - r1 AS DECIMAL(38,0)) * n) AS w2, SUM(CAST(1000000000000 - r1 AS DECIMAL(38,0)) * n * v) AS m2, SUM(CAST(1000000000000 - r1 AS DECIMAL(38,0)) * n * v * v) AS q2 FROM r3), p4 AS MATERIALIZED (SELECT mm.n AS n, round(CAST(w1 AS DOUBLE) / (CAST(mm.n AS DOUBLE) * 1000000000000.0), 9) AS pi, round(CAST(m1 AS DOUBLE) / CAST(w1 AS DOUBLE), 9) AS mu1, GREATEST(round(CAST(q1 AS DOUBLE) / CAST(w1 AS DOUBLE) - round(CAST(m1 AS DOUBLE) / CAST(w1 AS DOUBLE), 9) * round(CAST(m1 AS DOUBLE) / CAST(w1 AS DOUBLE), 9), 3), 0.000001) AS s1, round(CAST(m2 AS DOUBLE) / CAST(w2 AS DOUBLE), 9) AS mu2, GREATEST(round(CAST(q2 AS DOUBLE) / CAST(w2 AS DOUBLE) - round(CAST(m2 AS DOUBLE) / CAST(w2 AS DOUBLE), 9) * round(CAST(m2 AS DOUBLE) / CAST(w2 AS DOUBLE), 9), 3), 0.000001) AS s2 FROM g3, mm), fin AS (SELECT n, pi, mu1, s1, mu2, s2, round(abs(mu2 - mu1) / sqrt((s1 + s2) / 2.0), 6) + 0.0 AS sep FROM p4) SELECT CAST(1 AS BIGINT) AS component, n, round(pi, 6) + 0.0 AS pi, round(mu1, 6) + 0.0 AS mu, s1 + 0.0 AS sigma2, sep AS separation FROM fin UNION ALL SELECT CAST(2 AS BIGINT), n, round(1.0 - pi, 6) + 0.0, round(mu2, 6) + 0.0, s2 + 0.0, sep FROM fin ORDER BY component""",
-    // sparse weekly census, spine-length moments, pinned CV classes
-    "q685_xyz_classes" ->
-      """WITH d AS (SELECT l_partkey, date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)) // 7 AS week, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty FROM lineitem GROUP BY 1, 2), b AS (SELECT MAX(week) - MIN(week) + 1 AS t FROM d), g AS (SELECT l_partkey, CAST(SUM(qty) AS BIGINT) AS s, CAST(SUM(qty * qty) AS BIGINT) AS ss FROM d GROUP BY 1 HAVING SUM(qty) > 0), c AS (SELECT l_partkey, s, ss, CAST((SELECT t FROM b) AS BIGINT) AS t FROM g), r AS (SELECT l_partkey, t, CAST(s AS DOUBLE) / CAST(t AS DOUBLE) AS mean, CAST(ss AS DOUBLE) / CAST(t AS DOUBLE) - (CAST(s AS DOUBLE) / CAST(t AS DOUBLE)) * (CAST(s AS DOUBLE) / CAST(t AS DOUBLE)) AS varp FROM c), z AS (SELECT l_partkey, t, mean, round(sqrt(varp) / mean, 9) AS cv FROM r) SELECT l_partkey, t AS t_buckets, round(mean, 6) AS mean, round(cv, 6) + 0.0 AS cv, CASE WHEN cv < 0.5 THEN 'X' WHEN cv < 1.0 THEN 'Y' ELSE 'Z' END AS xyz_class FROM z ORDER BY l_partkey""",
-    // key census, pinned rate moments, one-row MoM prior broadcast,
-    // pinned posterior means
-    "q680_eb_rates" ->
-      """WITH cen AS (SELECT l_partkey AS k, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END) AS BIGINT) AS s FROM lineitem GROUP BY 1), rr AS (SELECT k, n, s, round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE), 9) AS r FROM cen), pr AS (SELECT CAST(COUNT(*) AS BIGINT) AS p, SUM(CAST(r AS DECIMAL(18,9))) AS sr, SUM(CAST(round(r * r, 9) AS DECIMAL(18,9))) AS srr FROM rr), pm AS (SELECT p, CAST(sr AS DOUBLE) / CAST(p AS DOUBLE) AS mr, (CAST(p AS DOUBLE) * CAST(srr AS DOUBLE) - CAST(sr AS DOUBLE) * CAST(sr AS DOUBLE)) / (CAST(p AS DOUBLE) * (CAST(p AS DOUBLE) - 1.0)) AS vr FROM pr), pp AS (SELECT p, round(mr, 9) AS m, round(vr, 9) AS v, CASE WHEN p >= 3 AND vr > 0.0 AND mr > 0.0 AND mr < 1.0 AND mr * (1.0 - mr) / vr - 1.0 > 0.0 THEN round(mr * (1.0 - mr) / vr - 1.0, 9) END AS kc FROM pm) SELECT k AS l_partkey, n, s, round(r, 6) AS raw_rate, CASE WHEN kc IS NOT NULL THEN round(m * kc, 6) END AS prior_alpha, CASE WHEN kc IS NOT NULL THEN round((1.0 - m) * kc, 6) END AS prior_beta, CASE WHEN kc IS NOT NULL THEN round((CAST(s AS DOUBLE) + m * kc) / (CAST(n AS DOUBLE) + kc), 6) END AS shrunk_rate FROM rr, pp ORDER BY l_partkey""",
-    // demand census, cumulative windows, fractile row pick, exact
-    // prefix-sum expectations
-    "q678_newsvendor" ->
-      """WITH cen AS (SELECT l_partkey AS k, CAST(l_quantity AS BIGINT) AS d, CAST(COUNT(*) AS BIGINT) AS c FROM lineitem GROUP BY 1, 2), cw AS (SELECT k, d, c, CAST(SUM(c) OVER (PARTITION BY k ORDER BY d) AS BIGINT) AS cum, CAST(SUM(c * d) OVER (PARTITION BY k ORDER BY d) AS BIGINT) AS cumv, CAST(SUM(c) OVER (PARTITION BY k) AS BIGINT) AS n, CAST(SUM(c * d) OVER (PARTITION BY k) AS BIGINT) AS totv FROM cen), flt AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY k ORDER BY d) AS rn FROM cw WHERE CAST(cum AS DOUBLE) >= 0.75 * CAST(n AS DOUBLE)) SELECT k AS l_partkey, n, d AS q_star, round(CAST(cum AS DOUBLE) / CAST(n AS DOUBLE), 6) AS service_level, round((CAST(totv - cumv AS DOUBLE) - CAST(d AS DOUBLE) * CAST(n - cum AS DOUBLE)) / CAST(n AS DOUBLE), 6) AS exp_underage, round((CAST(d AS DOUBLE) * CAST(cum AS DOUBLE) - CAST(cumv AS DOUBLE)) / CAST(n AS DOUBLE), 6) AS exp_overage, round(3.0 * ((CAST(totv - cumv AS DOUBLE) - CAST(d AS DOUBLE) * CAST(n - cum AS DOUBLE)) / CAST(n AS DOUBLE)) + 1.0 * ((CAST(d AS DOUBLE) * CAST(cum AS DOUBLE) - CAST(cumv AS DOUBLE)) / CAST(n AS DOUBLE)), 6) AS exp_cost FROM flt WHERE rn = 1 ORDER BY l_partkey""",
-    // positive-mass census, pinned-ln geometric mean, one pinned exp
-    "q679_atkinson" ->
-      """WITH c AS (SELECT n_name AS k, CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS v FROM customer JOIN nation ON c_nationkey = n_nationkey), g AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CASE WHEN v > 0 THEN 1 ELSE 0 END) AS BIGINT) AS np, CAST(SUM(CASE WHEN v > 0 THEN v ELSE 0 END) AS BIGINT) AS sv, SUM(CAST(CASE WHEN v > 0 THEN round(ln(CAST(v AS DOUBLE)), 9) ELSE 0.0 END AS DECIMAL(28,12))) AS sl FROM c GROUP BY 1) SELECT k AS n_name, n, np AS n_pos, CASE WHEN np >= 1 THEN round(CAST(sv AS DOUBLE) / CAST(np AS DOUBLE), 6) END AS mean, CASE WHEN np >= 1 AND CAST(sv AS DOUBLE) / CAST(np AS DOUBLE) > 0.0 THEN round(1.0 - exp(round(CAST(sl AS DOUBLE) / CAST(np AS DOUBLE), 9)) / (CAST(sv AS DOUBLE) / CAST(np AS DOUBLE)), 6) + 0.0 END AS atkinson FROM g ORDER BY n_name""",
-    // q420 Welch family per region, decimal -2 ln p sums, q574-style
-    // pinned ln-factorials, exp-pinned survival terms
-    "q677_combined_tests" ->
-      """WITH c AS (SELECT r.r_name, n.n_name, CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents FROM customer JOIN nation n ON c_nationkey = n_nationkey JOIN region r ON n.n_regionkey = r.r_regionkey), g AS (SELECT r_name, n_name, CAST(COUNT(*) AS BIGINT) AS na, SUM(CAST(cents AS DECIMAL(38,0))) AS sa, SUM(CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0))) AS saa FROM c GROUP BY 1, 2), t AS (SELECT CAST(COUNT(*) AS BIGINT) AS nt, SUM(CAST(cents AS DECIMAL(38,0))) AS st, SUM(CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0))) AS stt FROM c), j AS (SELECT r_name, n_name, na, CAST(sa AS DOUBLE) AS saD, CAST(saa AS DOUBLE) AS saaD, nt - na AS nb, CAST(st - sa AS DOUBLE) AS sbD, CAST(stt - saa AS DOUBLE) AS sbbD FROM g, t), zc AS (SELECT r_name, n_name, (saD / CAST(na AS DOUBLE) - sbD / CAST(nb AS DOUBLE)) / sqrt(((CAST(na AS DOUBLE) * saaD - saD * saD) / (CAST(na AS DOUBLE) * (CAST(na AS DOUBLE) - 1.0))) / CAST(na AS DOUBLE) + ((CAST(nb AS DOUBLE) * sbbD - sbD * sbD) / (CAST(nb AS DOUBLE) * (CAST(nb AS DOUBLE) - 1.0))) / CAST(nb AS DOUBLE)) AS z FROM j), pt AS (SELECT r_name, n_name, z, 1.0 / (1.0 + 0.2316419 * abs(z)) AS tt FROM zc), pp AS (SELECT r_name, n_name, round(z, 6) AS zr, round(2.0 * 0.3989422804014327 * exp(-(abs(z) * abs(z)) / 2.0) * ((((1.330274429 * tt - 1.821255978) * tt + 1.781477937) * tt - 0.356563782) * tt + 0.319381530) * tt, 9) AS p FROM pt), ag AS (SELECT r_name, CAST(COUNT(*) AS BIGINT) AS m, SUM(CAST(zr AS DECIMAL(18,6))) AS sz, SUM(CAST(round(-2.0 * ln(GREATEST(p, 0.000000001)), 9) AS DECIMAL(18,9))) AS x2 FROM pp GROUP BY 1), st AS (SELECT r_name, m, round(CAST(sz AS DOUBLE) / sqrt(CAST(m AS DOUBLE)), 6) + 0.0 AS stouffer_z, CAST(x2 AS DOUBLE) AS x FROM ag), tm AS (SELECT r_name, m, stouffer_z, x, CAST(unnest(range(0, m)) AS BIGINT) AS k FROM st), lk AS (SELECT r_name, m, stouffer_z, x, k, CASE WHEN k = 0 THEN 0.0 ELSE round(ln(CAST(k AS DOUBLE)), 12) END AS lnk FROM tm), lf AS (SELECT r_name, m, stouffer_z, x, k, CAST(SUM(CAST(lnk AS DECIMAL(28,12))) OVER (PARTITION BY r_name ORDER BY k) AS DOUBLE) AS lf FROM lk), tt2 AS (SELECT r_name, m, stouffer_z, x, CAST(round(CASE WHEN k = 0 THEN exp(-x / 2.0) WHEN x <= 0.0 THEN 0.0 ELSE exp(-x / 2.0 + CAST(k AS DOUBLE) * ln(x / 2.0) - lf) END, 12) AS DECIMAL(28,12)) AS t FROM lf) SELECT r_name, m, stouffer_z, round(x, 6) AS fisher_stat, round(LEAST(CAST(SUM(t) AS DOUBLE), 1.0), 6) AS fisher_p FROM tt2 GROUP BY r_name, m, stouffer_z, x ORDER BY r_name""",
-    // broadcast dictionary join on the shared whitespace fold,
-    // row_number tie-break for the dominant term
-    "q675_gazetteer_tag" ->
-      """WITH g AS (SELECT DISTINCT unnest(string_split(lower(trim(p_name)), ' ')) AS term FROM part), tk AS (SELECT doc_id, unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w FROM documents), tot AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens FROM tk GROUP BY 1), mc AS (SELECT doc_id, w, CAST(COUNT(*) AS BIGINT) AS c FROM tk JOIN g ON tk.w = g.term GROUP BY 1, 2), rn AS (SELECT doc_id, w, c, ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY c DESC, w) AS rn FROM mc), st AS (SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_matched, COUNT(*) AS n_terms, MAX(CASE WHEN rn = 1 THEN w END) AS top_term, MAX(CASE WHEN rn = 1 THEN c END) AS top_count FROM rn GROUP BY 1) SELECT tot.doc_id, n_tokens, COALESCE(n_matched, 0) AS n_matched, COALESCE(n_terms, 0) AS n_terms, round(CAST(COALESCE(n_matched, 0) AS DOUBLE) / CAST(n_tokens AS DOUBLE), 6) AS coverage, top_term, COALESCE(top_count, 0) AS top_count FROM tot LEFT JOIN st ON tot.doc_id = st.doc_id ORDER BY tot.doc_id""",
-    // unrolled lazy power iteration: decimal gather sums, +I shift,
-    // per-round exact max normalization
-    "q674_eigen_centrality" ->
-      """WITH pairs AS (SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp FROM lineitem JOIN orders ON l_orderkey = o_orderkey), edges AS MATERIALIZED (SELECT cust AS src, -supp AS dst FROM pairs UNION ALL SELECT -supp AS src, cust AS dst FROM pairs), x0 AS MATERIALIZED (SELECT DISTINCT src AS node, CAST(1.0 AS DOUBLE) AS x FROM edges), it1 AS MATERIALIZED (SELECT e.dst AS node, SUM(CAST(p.x AS DECIMAL(28,9))) AS c FROM edges e JOIN x0 p ON e.src = p.node GROUP BY e.dst), lz1 AS MATERIALIZED (SELECT i.node, i.c + CAST(p.x AS DECIMAL(28,9)) AS c2 FROM it1 i JOIN x0 p ON i.node = p.node), x1 AS MATERIALIZED (SELECT node, CAST(c2 AS DOUBLE) / CAST((SELECT MAX(c2) FROM lz1) AS DOUBLE) AS x FROM lz1), it2 AS MATERIALIZED (SELECT e.dst AS node, SUM(CAST(p.x AS DECIMAL(28,9))) AS c FROM edges e JOIN x1 p ON e.src = p.node GROUP BY e.dst), lz2 AS MATERIALIZED (SELECT i.node, i.c + CAST(p.x AS DECIMAL(28,9)) AS c2 FROM it2 i JOIN x1 p ON i.node = p.node), x2 AS MATERIALIZED (SELECT node, CAST(c2 AS DOUBLE) / CAST((SELECT MAX(c2) FROM lz2) AS DOUBLE) AS x FROM lz2), it3 AS MATERIALIZED (SELECT e.dst AS node, SUM(CAST(p.x AS DECIMAL(28,9))) AS c FROM edges e JOIN x2 p ON e.src = p.node GROUP BY e.dst), lz3 AS MATERIALIZED (SELECT i.node, i.c + CAST(p.x AS DECIMAL(28,9)) AS c2 FROM it3 i JOIN x2 p ON i.node = p.node), x3 AS MATERIALIZED (SELECT node, CAST(c2 AS DOUBLE) / CAST((SELECT MAX(c2) FROM lz3) AS DOUBLE) AS x FROM lz3), it4 AS MATERIALIZED (SELECT e.dst AS node, SUM(CAST(p.x AS DECIMAL(28,9))) AS c FROM edges e JOIN x3 p ON e.src = p.node GROUP BY e.dst), lz4 AS MATERIALIZED (SELECT i.node, i.c + CAST(p.x AS DECIMAL(28,9)) AS c2 FROM it4 i JOIN x3 p ON i.node = p.node), x4 AS MATERIALIZED (SELECT node, CAST(c2 AS DOUBLE) / CAST((SELECT MAX(c2) FROM lz4) AS DOUBLE) AS x FROM lz4), it5 AS MATERIALIZED (SELECT e.dst AS node, SUM(CAST(p.x AS DECIMAL(28,9))) AS c FROM edges e JOIN x4 p ON e.src = p.node GROUP BY e.dst), lz5 AS MATERIALIZED (SELECT i.node, i.c + CAST(p.x AS DECIMAL(28,9)) AS c2 FROM it5 i JOIN x4 p ON i.node = p.node), x5 AS MATERIALIZED (SELECT node, CAST(c2 AS DOUBLE) / CAST((SELECT MAX(c2) FROM lz5) AS DOUBLE) AS x FROM lz5), it6 AS MATERIALIZED (SELECT e.dst AS node, SUM(CAST(p.x AS DECIMAL(28,9))) AS c FROM edges e JOIN x5 p ON e.src = p.node GROUP BY e.dst), lz6 AS MATERIALIZED (SELECT i.node, i.c + CAST(p.x AS DECIMAL(28,9)) AS c2 FROM it6 i JOIN x5 p ON i.node = p.node), x6 AS MATERIALIZED (SELECT node, CAST(c2 AS DOUBLE) / CAST((SELECT MAX(c2) FROM lz6) AS DOUBLE) AS x FROM lz6) SELECT node, round(x, 6) AS score FROM x6 ORDER BY score DESC, node LIMIT 100""",
-    // per-user encouragement census, pinned ITT / first-stage / Wald
-    // divisions, the naive diff beside them
-    "q650_iv_wald" ->
-      """WITH u AS (SELECT user_id, CAST(MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS hc, CAST(MAX(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS y FROM events GROUP BY 1), r AS (SELECT CAST(concat('0x', substr(md5(concat('iv:', CAST(user_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 = 1 AS z, hc, y FROM u), r2 AS (SELECT z, CASE WHEN z AND hc = 1 THEN 1 ELSE 0 END AS x, y FROM r), cen AS (SELECT z, CAST(x AS BIGINT) AS x, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(y) AS BIGINT) AS e FROM r2 GROUP BY 1, 2), f AS (SELECT CAST(SUM(CASE WHEN z THEN n ELSE 0 END) AS BIGINT) AS n1, CAST(SUM(CASE WHEN NOT z THEN n ELSE 0 END) AS BIGINT) AS n0, CAST(SUM(CASE WHEN z THEN x * n ELSE 0 END) AS BIGINT) AS x1, CAST(SUM(CASE WHEN NOT z THEN x * n ELSE 0 END) AS BIGINT) AS x0, CAST(SUM(CASE WHEN z THEN e ELSE 0 END) AS BIGINT) AS y1, CAST(SUM(CASE WHEN NOT z THEN e ELSE 0 END) AS BIGINT) AS y0, CAST(SUM(CASE WHEN x = 1 THEN n ELSE 0 END) AS BIGINT) AS nt, CAST(SUM(CASE WHEN x = 0 THEN n ELSE 0 END) AS BIGINT) AS nc, CAST(SUM(CASE WHEN x = 1 THEN e ELSE 0 END) AS BIGINT) AS yt, CAST(SUM(CASE WHEN x = 0 THEN e ELSE 0 END) AS BIGINT) AS yc FROM cen), g AS (SELECT *, CAST(y1 AS DOUBLE) / CAST(n1 AS DOUBLE) - CAST(y0 AS DOUBLE) / CAST(n0 AS DOUBLE) AS itt, CAST(x1 AS DOUBLE) / CAST(n1 AS DOUBLE) - CAST(x0 AS DOUBLE) / CAST(n0 AS DOUBLE) AS fs FROM f) SELECT n1, n0, CASE WHEN n1 > 0 AND n0 > 0 THEN round(fs, 6) END AS first_stage, CASE WHEN n1 > 0 AND n0 > 0 THEN round(itt, 6) END AS itt, CASE WHEN n1 > 0 AND n0 > 0 AND abs(fs) > 0.01 THEN round(itt / fs, 6) END AS wald, CASE WHEN nt > 0 AND nc > 0 THEN round(CAST(yt AS DOUBLE) / CAST(nt AS DOUBLE) - CAST(yc AS DOUBLE) / CAST(nc AS DOUBLE), 6) END AS naive_diff FROM g""",
-    // bandwidth window, per-side exact moments, intercepts AT the
-    // cutoff, pinned intercept variances and gap z
-    "q651_rdd" ->
-      """WITH c AS (SELECT CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS x, CASE WHEN EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) THEN 1 ELSE 0 END AS y FROM customer), b AS (SELECT x, y, x >= 0 AS above FROM c WHERE x >= -300000 AND x < 300000), mom AS (SELECT above, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(y AS DECIMAL(38,0))) AS sy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS sxy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))) AS sxx, SUM(CAST(y AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS syy FROM b GROUP BY 1 HAVING COUNT(*) >= 3), g AS (SELECT above, n, CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS cxx, CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS cxy, CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS cyy, CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd FROM mom), g2 AS (SELECT above, n, CASE WHEN cxx > 0.0 THEN round((syd - cxy / cxx * sxd) / CAST(n AS DOUBLE), 9) END AS a, CASE WHEN cxx > 0.0 THEN round(cxy / cxx, 9) END AS b, CASE WHEN cxx > 0.0 AND (cyy - cxy * cxy / cxx) / CAST(n AS DOUBLE) > 0.0 THEN round((cyy - cxy * cxy / cxx) / CAST(n AS DOUBLE) / (CAST(n AS DOUBLE) - 2.0) * (1.0 / CAST(n AS DOUBLE) + (sxd / CAST(n AS DOUBLE)) * (sxd / CAST(n AS DOUBLE)) / (cxx / CAST(n AS DOUBLE))), 9) END AS va FROM g), lo AS (SELECT n AS n_below, a AS a0, b AS slope_below, va AS v0 FROM g2 WHERE NOT above), hi AS (SELECT n AS n_above, a AS a1, b AS slope_above, va AS v1 FROM g2 WHERE above) SELECT n_below, n_above, round(a0, 6) AS est_below, round(a1, 6) AS est_above, round(slope_below, 6) AS slope_below, round(slope_above, 6) AS slope_above, round(a1 - a0, 6) AS gap, CASE WHEN v0 IS NOT NULL AND v1 IS NOT NULL THEN round(sqrt(v0 + v1), 6) END AS se, CASE WHEN v0 IS NOT NULL AND v1 IS NOT NULL AND sqrt(v0 + v1) > 0.0 THEN round((a1 - a0) / sqrt(v0 + v1), 6) END AS z FROM lo, hi""",
-    // one exact moment pass, three closed-form fits (the 2x2 normal
-    // equations for y ~ x + m), pinned Sobel finish
-    "q652_mediation" ->
-      """WITH o AS (SELECT o_orderkey, CASE WHEN substr(o_orderpriority, 1, 1) IN ('1', '2') THEN 1 ELSE 0 END AS x, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS y FROM orders), lc AS (SELECT l_orderkey, CAST(COUNT(*) AS BIGINT) AS m FROM lineitem GROUP BY 1), fr AS (SELECT x, COALESCE(m, 0) AS m, y FROM o LEFT JOIN lc ON o_orderkey = l_orderkey), f AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(m AS DECIMAL(38,0))) AS sm, SUM(CAST(y AS DECIMAL(38,0))) AS sy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(m AS DECIMAL(38,0))) AS sxm, SUM(CAST(x AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS sxy, SUM(CAST(m AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS smy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))) AS sxx, SUM(CAST(m AS DECIMAL(38,0)) * CAST(m AS DECIMAL(38,0))) AS smm, SUM(CAST(y AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS syy FROM fr), g AS (SELECT n, CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS cxx, CAST(n AS DOUBLE) * CAST(smm AS DOUBLE) - CAST(sm AS DOUBLE) * CAST(sm AS DOUBLE) AS cmm, CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS cyy, CAST(n AS DOUBLE) * CAST(sxm AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sm AS DOUBLE) AS cxm, CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS cxy, CAST(n AS DOUBLE) * CAST(smy AS DOUBLE) - CAST(sm AS DOUBLE) * CAST(sy AS DOUBLE) AS cmy FROM f), h AS (SELECT n, cxx, cmm, cyy, cxm, cxy, cmy, cxm / cxx AS apath, (cmm - cxm * cxm / cxx) / CAST(n AS DOUBLE) AS ssea, cxy / cxx AS ctot, cxx * cmm - cxm * cxm AS det FROM g), h2 AS (SELECT *, ssea / (CAST(n AS DOUBLE) - 2.0) * CAST(n AS DOUBLE) / cxx AS vara, (cxy * cmm - cmy * cxm) / det AS cdir, (cmy * cxx - cxy * cxm) / det AS bpath FROM h), h3 AS (SELECT *, (cyy - cdir * cxy - bpath * cmy) / CAST(n AS DOUBLE) AS sseu FROM h2), h4 AS (SELECT *, sseu / (CAST(n AS DOUBLE) - 3.0) * CAST(n AS DOUBLE) * cxx / det AS varb, apath * bpath AS ind FROM h3), h5 AS (SELECT *, sqrt(apath * apath * varb + bpath * bpath * vara) AS sobelse, (n >= 5 AND cxx > 0.0 AND det > 0.0 AND sseu > 0.0 AND ssea > 0.0) AS ok FROM h4) SELECT n, CASE WHEN ok THEN round(apath, 6) END AS a_x_to_m, CASE WHEN ok THEN round(bpath, 6) END AS b_m_to_y, CASE WHEN ok THEN round(ctot, 6) END AS total_effect, CASE WHEN ok THEN round(cdir, 6) END AS direct_effect, CASE WHEN ok THEN round(ind, 6) END AS indirect_effect, CASE WHEN ok AND abs(ctot) > 0.0 THEN round(ind / ctot, 6) END AS prop_mediated, CASE WHEN ok AND sobelse > 0.0 THEN round(ind / sobelse, 6) END AS sobel_z FROM h5""",
-    // all-cause KM factor chain, S(u-) folds, per-step increments
-    // pinned + decimal-cumulated per cause
-    "q645_competing_risks" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS sec, event_id, event_type FROM events), b AS (SELECT MIN(sec) AS lo, MAX(sec) AS hi FROM e), r AS (SELECT user_id, event_type, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY sec DESC, event_id DESC) AS rn FROM e), lt AS (SELECT user_id, event_type AS last_type FROM r WHERE rn = 1), u AS (SELECT user_id, MIN(sec) AS first, MAX(sec) AS last FROM e GROUP BY 1), lv AS (SELECT CAST((last - first) // 3600 AS BIGINT) AS t, (last <= (SELECT lo + 2 * (hi - lo) // 3 FROM b)) AND last_type = 'purchase' AS ia, (last <= (SELECT lo + 2 * (hi - lo) // 3 FROM b)) AND last_type <> 'purchase' AS ib FROM u JOIN lt USING (user_id)), byt AS (SELECT t, CAST(SUM(CASE WHEN ia THEN 1 ELSE 0 END) AS BIGINT) AS da, CAST(SUM(CASE WHEN ib AND NOT ia THEN 1 ELSE 0 END) AS BIGINT) AS db, CAST(SUM(CASE WHEN NOT ia AND NOT ib THEN 1 ELSE 0 END) AS BIGINT) AS c, COUNT(*) AS n_t FROM lv GROUP BY 1), rk AS (SELECT t, da, db, c, CAST(SUM(n_t) OVER (ORDER BY t ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT) AS n_risk FROM byt), fk AS (SELECT *, 1.0 - CAST(da + db AS DOUBLE) / CAST(n_risk AS DOUBLE) AS factor FROM rk), idx AS (SELECT t, ROW_NUMBER() OVER (ORDER BY t) AS i FROM fk), arr AS (SELECT list(factor ORDER BY t) AS fs FROM fk), st AS (SELECT fk.t, fk.da, fk.db, fk.c, fk.n_risk, list_reduce(list_prepend(CAST(1 AS DOUBLE), fs[1:CAST(i - 1 AS INTEGER)]), (a, x) -> a * x) AS sprev, list_reduce(list_prepend(CAST(1 AS DOUBLE), fs[1:CAST(i AS INTEGER)]), (a, x) -> a * x) AS snow FROM fk JOIN idx ON fk.t = idx.t CROSS JOIN arr), inc AS (SELECT *, CAST(round(sprev * (CAST(da AS DOUBLE) / CAST(n_risk AS DOUBLE)), 9) AS DECIMAL(28,9)) AS inca, CAST(round(sprev * (CAST(db AS DOUBLE) / CAST(n_risk AS DOUBLE)), 9) AS DECIMAL(28,9)) AS incb FROM st) SELECT t, n_risk, da AS n_cause_a, db AS n_cause_b, c AS n_censored, round(snow, 6) AS surv_all, round(CAST(SUM(inca) OVER w AS DOUBLE), 6) AS cif_a, round(CAST(SUM(incb) OVER w AS DOUBLE), 6) AS cif_b FROM inc WINDOW w AS (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) ORDER BY t""",
-    // event-age + lifespan censuses, suffix risk window, pinned rates,
-    // exact decimal running MCF
-    "q646_mcf" ->
-      """WITH e AS (SELECT user_id AS u, epoch_ns(ts) // 1000000000 AS sec FROM events), w AS (SELECT u, sec, MIN(sec) OVER (PARTITION BY u) AS first, MAX(sec) OVER (PARTITION BY u) AS last FROM e), dc AS (SELECT CAST((sec - first) // 3600 AS BIGINT) AS a, CAST(COUNT(*) AS BIGINT) AS d FROM w GROUP BY 1), lc AS (SELECT l, CAST(COUNT(*) AS BIGINT) AS wt FROM (SELECT DISTINCT u, CAST((last - first) // 3600 AS BIGINT) AS l FROM w) GROUP BY 1), mg AS (SELECT a, CAST(SUM(d) AS BIGINT) AS d, CAST(SUM(wt) AS BIGINT) AS wt FROM (SELECT a, d, 0 AS wt FROM dc UNION ALL SELECT l, 0, wt FROM lc) GROUP BY 1), rk AS (SELECT a, d, CAST(SUM(wt) OVER (ORDER BY a ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT) AS n_risk FROM mg), rt AS (SELECT a, d, n_risk, CASE WHEN n_risk > 0 THEN round(CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE), 9) END AS rate FROM rk), mc AS (SELECT a, d, n_risk, rate, SUM(CAST(COALESCE(rate, 0.0) AS DECIMAL(28,9))) OVER (ORDER BY a ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mcf FROM rt) SELECT a AS age, d AS n_events, n_risk, rate, round(CAST(mcf AS DOUBLE), 6) AS mcf FROM mc WHERE d > 0 ORDER BY age""",
-    // per-part quantity census, pinned ln points, per-brand
-    // closed-form fit
-    "q648_price_elasticity" ->
-      """WITH q AS (SELECT l_partkey, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty FROM lineitem GROUP BY 1), fr AS (SELECT p_brand AS g, CAST(CAST(p_retailprice AS DECIMAL(12,2)) * 100 AS BIGINT) AS x, qty AS y FROM part JOIN q ON p_partkey = l_partkey), pts AS (SELECT g, CAST(round(ln(CAST(x AS DOUBLE)), 9) AS DECIMAL(28,9)) AS lx, CAST(round(ln(CAST(y AS DOUBLE)), 9) AS DECIMAL(28,9)) AS ly FROM fr WHERE x > 0 AND y > 0), p2 AS (SELECT g, lx, ly, CAST(round(CAST(lx AS DOUBLE) * CAST(lx AS DOUBLE), 9) AS DECIMAL(28,9)) AS xx, CAST(round(CAST(lx AS DOUBLE) * CAST(ly AS DOUBLE), 9) AS DECIMAL(28,9)) AS xy, CAST(round(CAST(ly AS DOUBLE) * CAST(ly AS DOUBLE), 9) AS DECIMAL(28,9)) AS yy FROM pts), f AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS np, SUM(lx) AS sx, SUM(ly) AS sy, SUM(xx) AS sxx, SUM(xy) AS sxy, SUM(yy) AS syy FROM p2 GROUP BY 1), g2 AS (SELECT g, np, CAST(sx AS DOUBLE) AS sx, CAST(sy AS DOUBLE) AS sy, CAST(np AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS cxx, CAST(np AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS cxy, CAST(np AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS cyy FROM f) SELECT g, np AS n_points, CASE WHEN np >= 3 AND cxx > 0.0 THEN round(cxy / cxx, 6) END AS slope, CASE WHEN np >= 3 AND cxx > 0.0 THEN round((sy - cxy / cxx * sx) / CAST(np AS DOUBLE), 6) END AS intercept, CASE WHEN np >= 3 AND cxx > 0.0 AND cyy > 0.0 THEN round(cxy * cxy / (cxx * cyy), 6) END AS r2 FROM g2 ORDER BY g""",
-    // score-domain census, eight unrolled MATERIALIZED Newton steps,
-    // every sigma pinned in and out, decimal-summed grid terms
-    "q640_platt_scaling" ->
-      s"""WITH pcen AS MATERIALIZED (SELECT s, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(y) AS BIGINT) AS pos FROM (SELECT CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) // 10000 AS s, CASE WHEN EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'O') THEN 1 ELSE 0 END AS y FROM customer) GROUP BY 1), ptot AS (SELECT CAST(COUNT(*) AS BIGINT) AS cells, CAST(SUM(n) AS BIGINT) AS nt, CAST(SUM(pos) AS BIGINT) AS pt FROM pcen), pp0 AS (SELECT 0 AS it, round(ln((CAST(pt AS DOUBLE) + 1.0) / (CAST(nt - pt AS DOUBLE) + 1.0)), 9) AS a, 0.0 AS b FROM ptot), ${(1 to 8).map(plattIterSql).mkString(", ")} SELECT cells AS n_cells, nt AS n, pt AS n_pos, CAST(it AS BIGINT) AS steps_moved, round(a, 6) + 0.0 AS a, round(b, 6) + 0.0 AS b FROM pp8, ptot""",
-    // per-key pinned rates, the renormalized forward fold as a
-    // recursive CTE carrying two bounded scores + an exact decimal total
-    "q641_hmm_regimes" ->
-      """WITH RECURSIVE h AS (SELECT event_type AS k, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hid, CAST(COUNT(*) AS BIGINT) AS v FROM events GROUP BY 1, 2), o AS (SELECT k, v, CAST(ROW_NUMBER() OVER (PARTITION BY k ORDER BY hid) AS BIGINT) AS rn FROM h), par0 AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n, round(CAST(SUM(CAST(v AS DECIMAL(38,0))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 9) AS lam FROM o GROUP BY 1 HAVING COUNT(*) >= 8 AND SUM(v) > 0), par AS (SELECT k, n, lam, round(0.5 * lam, 9) AS lam0, round(2.0 * lam, 9) AS lam1, round(ln(round(0.5 * lam, 9)), 12) AS l0, round(ln(round(2.0 * lam, 9)), 12) AS l1, round(ln(lam), 12) AS lm, round(ln(0.9), 12) AS ls, round(ln(0.1), 12) AS lw, round(ln(0.5), 12) AS lp FROM par0), rec AS (SELECT par.k, CAST(1 AS BIGINT) AS rn, round(par.lp + round(CAST(o.v AS DOUBLE) * par.l0 - par.lam0, 9), 9) - greatest(round(par.lp + round(CAST(o.v AS DOUBLE) * par.l0 - par.lam0, 9), 9), round(par.lp + round(CAST(o.v AS DOUBLE) * par.l1 - par.lam1, 9), 9)) AS d0, round(par.lp + round(CAST(o.v AS DOUBLE) * par.l1 - par.lam1, 9), 9) - greatest(round(par.lp + round(CAST(o.v AS DOUBLE) * par.l0 - par.lam0, 9), 9), round(par.lp + round(CAST(o.v AS DOUBLE) * par.l1 - par.lam1, 9), 9)) AS d1, CAST(greatest(round(par.lp + round(CAST(o.v AS DOUBLE) * par.l0 - par.lam0, 9), 9), round(par.lp + round(CAST(o.v AS DOUBLE) * par.l1 - par.lam1, 9), 9)) AS DECIMAL(28,9)) AS ll FROM par JOIN o ON o.k = par.k AND o.rn = 1 UNION ALL SELECT r.k, r.rn + 1, f.f0 - greatest(f.f0, f.f1), f.f1 - greatest(f.f0, f.f1), CAST(r.ll + CAST(greatest(f.f0, f.f1) AS DECIMAL(28,9)) AS DECIMAL(28,9)) FROM rec r JOIN par ON par.k = r.k JOIN o x ON x.k = r.k AND x.rn = r.rn + 1, LATERAL (SELECT round(round(greatest(r.d0 + par.ls, r.d1 + par.lw) + round(ln(1.0 + round(exp(round(least(r.d0 + par.ls, r.d1 + par.lw) - greatest(r.d0 + par.ls, r.d1 + par.lw), 9)), 12)), 12), 9) + round(CAST(x.v AS DOUBLE) * par.l0 - par.lam0, 9), 9) AS f0, round(round(greatest(r.d0 + par.lw, r.d1 + par.ls) + round(ln(1.0 + round(exp(round(least(r.d0 + par.lw, r.d1 + par.ls) - greatest(r.d0 + par.lw, r.d1 + par.ls), 9)), 12)), 12), 9) + round(CAST(x.v AS DOUBLE) * par.l1 - par.lam1, 9), 9) AS f1) f), fin AS (SELECT rec.k, rec.ll + CAST(round(greatest(rec.d0, rec.d1) + round(ln(1.0 + round(exp(round(least(rec.d0, rec.d1) - greatest(rec.d0, rec.d1), 9)), 12)), 12), 9) AS DECIMAL(28,9)) AS ll2 FROM rec JOIN par0 ON par0.k = rec.k AND rec.rn = par0.n), l1s AS (SELECT o.k, SUM(CAST(round(CAST(o.v AS DOUBLE) * par.lm - par.lam, 9) AS DECIMAL(28,9))) AS ll1 FROM o JOIN par ON par.k = o.k GROUP BY 1) SELECT fin.k AS event_type, par0.n, round(CAST(ll1 AS DOUBLE), 4) AS ll_single, round(CAST(ll2 AS DOUBLE), 4) AS ll_regime, round(2.0 * (CAST(ll2 AS DOUBLE) - CAST(ll1 AS DOUBLE)), 6) AS lr, round(2.0 * (CAST(ll2 AS DOUBLE) - CAST(ll1 AS DOUBLE)), 6) > 5.99 AS regime_evidence FROM fin JOIN l1s ON l1s.k = fin.k JOIN par0 ON par0.k = fin.k ORDER BY event_type""",
-    // first-order anchoring, integer week ages, one cumulative window
-    // per cohort, a pinned per-customer division
-    "q642_ltv_curve" ->
-      """WITH o0 AS (SELECT o_custkey AS u, o_orderdate AS d, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM orders), fw AS (SELECT u, MIN(d) OVER (PARTITION BY u) AS f, d, v FROM o0), bs AS (SELECT u, CAST(year(f) AS BIGINT) AS cohort, CAST(datediff('day', f, d) AS BIGINT) // 7 AS age_week, v FROM fw), cen AS (SELECT cohort, age_week, CAST(COUNT(DISTINCT u) AS BIGINT) AS act, SUM(CAST(v AS DECIMAL(38,0))) AS rev FROM bs GROUP BY 1, 2), sz AS (SELECT cohort, CAST(COUNT(DISTINCT u) AS BIGINT) AS sz FROM bs GROUP BY 1), cm AS (SELECT cohort, age_week, act, rev, SUM(rev) OVER (PARTITION BY cohort ORDER BY age_week ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM cen) SELECT cm.cohort AS cohort, age_week, act AS n_active, CAST(rev AS BIGINT) AS revenue_cents, CAST(cum AS BIGINT) AS cum_revenue_cents, sz.sz AS cohort_size, CASE WHEN sz.sz > 0 THEN round(CAST(cum AS DOUBLE) / CAST(sz.sz AS DOUBLE), 6) END AS ltv_cents FROM cm JOIN sz ON cm.cohort = sz.cohort ORDER BY cm.cohort, age_week""",
-    // two key censuses, exact DECIMAL38 per-key products, the top
-    // fan-out keys with totals broadcast
-    "q643_join_audit" ->
-      """WITH c AS (SELECT user_id AS k, CAST(COUNT(*) AS BIGINT) AS nl FROM events GROUP BY 1), p AS (SELECT k, nl, nl AS nr, CAST(nl AS DECIMAL(38,0)) * CAST(nl AS DECIMAL(38,0)) AS outr FROM c), t AS (SELECT (SELECT SUM(outr) FROM p) AS total_out, (SELECT SUM(CAST(nl AS DECIMAL(38,0))) FROM c) AS tl, (SELECT SUM(CAST(nl AS DECIMAL(38,0))) FROM c) AS tr, (SELECT CAST(COUNT(*) AS BIGINT) FROM p) AS n_keys), r AS (SELECT k, nl, nr, outr, CAST(ROW_NUMBER() OVER (ORDER BY outr DESC, k) AS BIGINT) AS rk FROM p) SELECT rk AS rank, CAST(k AS VARCHAR) AS key, nl AS n_left, nr AS n_right, CAST(outr AS BIGINT) AS out_rows, CAST(total_out AS BIGINT) AS total_out_rows, n_keys AS n_matched_keys, CASE WHEN greatest(tl, tr) <> 0 THEN round(CAST(total_out AS DOUBLE) / CAST(greatest(tl, tr) AS DOUBLE), 6) END AS amplification, CASE WHEN total_out <> 0 THEN round(CAST(outr AS DOUBLE) / CAST(total_out AS DOUBLE), 6) END AS share_of_out FROM r, t WHERE rk <= 5 ORDER BY rank""",
-    // dense spine, 2x24 centered-MA trend, pinned detrended grid,
-    // centered slot means, Hyndman strength from re-pinned variances
-    "q634_seasonal_decomposition" ->
-      """WITH h AS (SELECT event_type AS k, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hid FROM events), b AS (SELECT MIN(hid) AS lo, MAX(hid) AS hi FROM h), sp AS (SELECT CAST(unnest(range((SELECT lo FROM b), (SELECT hi FROM b) + 1)) AS BIGINT) AS hid), ty AS (SELECT DISTINCT k FROM h), cen AS (SELECT k, hid, CAST(COUNT(*) AS BIGINT) AS v FROM h GROUP BY 1, 2), fr AS (SELECT ty.k, sp.hid AS bb, COALESCE(cen.v, 0) AS v FROM ty CROSS JOIN sp LEFT JOIN cen ON cen.k = ty.k AND cen.hid = sp.hid), w AS (SELECT k, bb, v, 2 * SUM(v) OVER iw AS inner2, LAG(v, 12) OVER pw AS lo12, LEAD(v, 12) OVER pw AS hi12, COUNT(*) OVER iw AS cnt FROM fr WINDOW iw AS (PARTITION BY k ORDER BY bb ROWS BETWEEN 11 PRECEDING AND 11 FOLLOWING), pw AS (PARTITION BY k ORDER BY bb)), d AS (SELECT k, bb, CAST(round(CAST(v AS DOUBLE) - CAST(lo12 + inner2 + hi12 AS DOUBLE) / 48.0, 9) AS DECIMAL(28,9)) AS detr, bb % 24 AS slot FROM w WHERE lo12 IS NOT NULL AND hi12 IS NOT NULL AND cnt = 23), sm AS (SELECT k, slot, CAST(COUNT(*) AS BIGINT) AS n_obs, SUM(detr) AS sd FROM d GROUP BY 1, 2), sm2 AS (SELECT k, slot, n_obs, CAST(round(CAST(sd AS DOUBLE) / CAST(n_obs AS DOUBLE), 9) AS DECIMAL(28,9)) AS raw FROM sm), ct AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS ns, SUM(raw) AS sraw FROM sm2 GROUP BY 1), ct2 AS (SELECT k, CAST(round(CAST(sraw AS DOUBLE) / CAST(ns AS DOUBLE), 9) AS DECIMAL(28,9)) AS ctr FROM ct WHERE ns = 24), se AS (SELECT sm2.k, slot, n_obs, CAST(raw - ctr AS DECIMAL(28,9)) AS sj FROM sm2 JOIN ct2 ON sm2.k = ct2.k), rm AS (SELECT d.k, d.detr, CAST(d.detr - se.sj AS DECIMAL(28,9)) AS r FROM d JOIN se ON d.k = se.k AND d.slot = se.slot), rv AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS nt, SUM(detr) AS sdt, SUM(CAST(round(CAST(detr AS DOUBLE) * CAST(detr AS DOUBLE), 9) AS DECIMAL(28,9))) AS sdd, SUM(r) AS sr, SUM(CAST(round(CAST(r AS DOUBLE) * CAST(r AS DOUBLE), 9) AS DECIMAL(28,9))) AS srr FROM rm GROUP BY 1 HAVING COUNT(*) >= 48), st AS (SELECT k, CASE WHEN (CAST(sdd AS DOUBLE) - CAST(nt AS DOUBLE) * (CAST(sdt AS DOUBLE) / CAST(nt AS DOUBLE)) * (CAST(sdt AS DOUBLE) / CAST(nt AS DOUBLE))) / (CAST(nt AS DOUBLE) - 1.0) > 0.0 THEN round(greatest(0.0, 1.0 - ((CAST(srr AS DOUBLE) - CAST(nt AS DOUBLE) * (CAST(sr AS DOUBLE) / CAST(nt AS DOUBLE)) * (CAST(sr AS DOUBLE) / CAST(nt AS DOUBLE))) / (CAST(nt AS DOUBLE) - 1.0)) / ((CAST(sdd AS DOUBLE) - CAST(nt AS DOUBLE) * (CAST(sdt AS DOUBLE) / CAST(nt AS DOUBLE)) * (CAST(sdt AS DOUBLE) / CAST(nt AS DOUBLE))) / (CAST(nt AS DOUBLE) - 1.0))), 6) END AS strength FROM rv) SELECT se.k AS event_type, slot, n_obs, round(CAST(sj AS DOUBLE), 6) AS seasonal, strength FROM se JOIN st ON se.k = st.k ORDER BY event_type, slot""",
-    // per-user lifespans, boundary census + one cumulative window over
-    // the boundary domain, both Little's-law sides emitted
-    "q635_concurrency" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS sec FROM events), iv AS (SELECT user_id, MIN(sec) AS s, MAX(sec) + 1 AS e FROM e GROUP BY 1), tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, MIN(s) AS lo, MAX(e) AS hi, SUM(CAST(e - s AS DECIMAL(38,0))) AS busy FROM iv), bd AS (SELECT s AS sec, 1 AS d FROM iv UNION ALL SELECT e, -1 FROM iv), net AS (SELECT sec, CAST(SUM(d) AS BIGINT) AS net FROM bd GROUP BY 1), cumq AS (SELECT sec, CAST(SUM(net) OVER (ORDER BY sec ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS c FROM net), pk AS (SELECT c AS peak, sec AS peak_sec FROM cumq ORDER BY c DESC, sec ASC LIMIT 1) SELECT n, hi - lo AS span_sec, CAST(busy AS BIGINT) AS busy_sec, CASE WHEN hi > lo AND n > 0 THEN round(CAST(n AS DOUBLE) / CAST(hi - lo AS DOUBLE), 9) END AS lambda, CASE WHEN hi > lo AND n > 0 THEN round(CAST(busy AS DOUBLE) / CAST(n AS DOUBLE), 6) END AS w_avg, CASE WHEN hi > lo AND n > 0 THEN round(CAST(busy AS DOUBLE) / CAST(hi - lo AS DOUBLE), 6) END AS l_avg, CASE WHEN hi > lo AND n > 0 THEN round(CAST(n AS DOUBLE) / CAST(hi - lo AS DOUBLE) * (CAST(busy AS DOUBLE) / CAST(n AS DOUBLE)), 6) END AS l_littles, peak, peak_sec FROM tot, pk""",
-    // dense spine, row-index regressor, pinned fit, grid scores, the
-    // Bartlett-weighted lag sums decimal-exact
-    "q637_newey_west" ->
-      """WITH h AS (SELECT event_type AS k, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hid FROM events), b AS (SELECT MIN(hid) AS lo, MAX(hid) AS hi FROM h), sp AS (SELECT CAST(unnest(range((SELECT lo FROM b), (SELECT hi FROM b) + 1)) AS BIGINT) AS hid), ty AS (SELECT DISTINCT k FROM h), cen AS (SELECT k, hid, CAST(COUNT(*) AS BIGINT) AS v FROM h GROUP BY 1, 2), fr AS (SELECT ty.k, sp.hid AS bb, COALESCE(cen.v, 0) AS v FROM ty CROSS JOIN sp LEFT JOIN cen ON cen.k = ty.k AND cen.hid = sp.hid), ix AS (SELECT k, bb, v, CAST(ROW_NUMBER() OVER (PARTITION BY k ORDER BY bb) AS BIGINT) AS i FROM fr), mom AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(i AS DECIMAL(38,0))) AS si, SUM(CAST(v AS DECIMAL(38,0))) AS sv, SUM(CAST(i AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))) AS siv, SUM(CAST(i AS DECIMAL(38,0)) * CAST(i AS DECIMAL(38,0))) AS sii, SUM(CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))) AS svv FROM ix GROUP BY 1 HAVING COUNT(*) >= 8), ft AS (SELECT k, n, CAST(n AS DOUBLE) * CAST(sii AS DOUBLE) - CAST(si AS DOUBLE) * CAST(si AS DOUBLE) AS cxx, CAST(n AS DOUBLE) * CAST(siv AS DOUBLE) - CAST(si AS DOUBLE) * CAST(sv AS DOUBLE) AS cxy, CAST(n AS DOUBLE) * CAST(svv AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE) AS cyy, CAST(si AS DOUBLE) AS sid, CAST(sv AS DOUBLE) AS svd FROM mom), ft2 AS (SELECT k, n, cxx, cxy, cyy, round(cxy / cxx, 9) AS bb2, round((svd - cxy / cxx * sid) / CAST(n AS DOUBLE), 9) AS aa, round(sid / CAST(n AS DOUBLE), 9) AS xb FROM ft), sc AS (SELECT ix.k, ix.bb, round((CAST(ix.i AS DOUBLE) - ft2.xb) * round(CAST(ix.v AS DOUBLE) - ft2.aa - ft2.bb2 * CAST(ix.i AS DOUBLE), 9), 9) AS u FROM ix JOIN ft2 ON ix.k = ft2.k), lgd AS (SELECT k, u, LAG(u, 1) OVER pw AS u1, LAG(u, 2) OVER pw AS u2, LAG(u, 3) OVER pw AS u3 FROM sc WINDOW pw AS (PARTITION BY k ORDER BY bb)), hg AS (SELECT k, SUM(CAST(round(u * u, 9) AS DECIMAL(28,9))) AS g0, SUM(CAST(round(u * u1, 9) AS DECIMAL(28,9))) AS g1, SUM(CAST(round(u * u2, 9) AS DECIMAL(28,9))) AS g2, SUM(CAST(round(u * u3, 9) AS DECIMAL(28,9))) AS g3 FROM lgd GROUP BY 1), fin AS (SELECT ft2.k, ft2.n, ft2.bb2, (ft2.cyy - ft2.cxy * ft2.cxy / ft2.cxx) / CAST(ft2.n AS DOUBLE) AS sse, ft2.cxx / CAST(ft2.n AS DOUBLE) AS sxxc, ft2.cxx AS cxx, CAST(hg.g0 AS DOUBLE) + 2.0 * 0.75 * CAST(COALESCE(hg.g1, 0) AS DOUBLE) + 2.0 * 0.5 * CAST(COALESCE(hg.g2, 0) AS DOUBLE) + 2.0 * 0.25 * CAST(COALESCE(hg.g3, 0) AS DOUBLE) AS shac FROM ft2 JOIN hg ON ft2.k = hg.k) SELECT k AS event_type, n, CASE WHEN cxx > 0.0 AND sse > 0.0 AND shac > 0.0 THEN round(bb2, 6) END AS slope, CASE WHEN cxx > 0.0 AND sse > 0.0 AND shac > 0.0 THEN round(sqrt(sse / (CAST(n AS DOUBLE) - 2.0) / sxxc), 6) END AS se_ols, CASE WHEN cxx > 0.0 AND sse > 0.0 AND shac > 0.0 THEN round(sqrt(shac) / sxxc, 6) END AS se_nw, CASE WHEN cxx > 0.0 AND sse > 0.0 AND shac > 0.0 THEN round(sqrt(shac) / sxxc / sqrt(sse / (CAST(n AS DOUBLE) - 2.0) / sxxc), 6) END AS se_ratio FROM fin ORDER BY event_type""",
-    // step-1 pinned OLS on the shared spine, step-2 DF on the 1e-9
-    // residual grid, the -3.34 two-series critical value shared
-    "q638_cointegration" ->
-      """WITH h AS (SELECT CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hh, event_type FROM events), b AS (SELECT MIN(hh) AS lo, MAX(hh) AS hi FROM h), sp AS (SELECT CAST(unnest(range((SELECT lo FROM b), (SELECT hi FROM b) + 1)) AS BIGINT) AS hh), cen AS (SELECT hh, CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS x, CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS y FROM h GROUP BY 1), fr AS (SELECT sp.hh, COALESCE(cen.x, 0) AS x, COALESCE(cen.y, 0) AS y FROM sp LEFT JOIN cen USING (hh)), mom AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(y AS DECIMAL(38,0))) AS sy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS sxy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))) AS sxx FROM fr), ft AS (SELECT n, CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS cxx0, CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS cxy0, CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd FROM mom), ft2 AS (SELECT n AS nn, CASE WHEN cxx0 > 0.0 THEN round(cxy0 / cxx0, 9) END AS beta, CASE WHEN cxx0 > 0.0 THEN round((syd - cxy0 / cxx0 * sxd) / CAST(n AS DOUBLE), 9) END AS alpha, cxx0 FROM ft), rs AS (SELECT fr.hh, CAST(round(CAST(fr.y AS DOUBLE) - ft2.alpha - ft2.beta * CAST(fr.x AS DOUBLE), 9) AS DECIMAL(28,9)) AS r, ft2.nn, ft2.beta, ft2.alpha, ft2.cxx0 FROM fr, ft2), rs2 AS (SELECT nn, beta, alpha, cxx0, r, CAST(LEAD(r, 1) OVER (ORDER BY hh) - r AS DECIMAL(28,9)) AS d FROM rs), rs3 AS (SELECT * FROM rs2 WHERE d IS NOT NULL), f AS (SELECT nn, beta, alpha, cxx0, CAST(COUNT(*) AS BIGINT) AS m, SUM(r) AS sr, SUM(d) AS sd, SUM(CAST(round(CAST(r AS DOUBLE) * CAST(r AS DOUBLE), 9) AS DECIMAL(28,9))) AS srr, SUM(CAST(round(CAST(r AS DOUBLE) * CAST(d AS DOUBLE), 9) AS DECIMAL(28,9))) AS srd, SUM(CAST(round(CAST(d AS DOUBLE) * CAST(d AS DOUBLE), 9) AS DECIMAL(28,9))) AS sdd FROM rs3 GROUP BY 1, 2, 3, 4), g AS (SELECT *, CAST(m AS DOUBLE) * CAST(srr AS DOUBLE) - CAST(sr AS DOUBLE) * CAST(sr AS DOUBLE) AS cxx, CAST(m AS DOUBLE) * CAST(srd AS DOUBLE) - CAST(sr AS DOUBLE) * CAST(sd AS DOUBLE) AS cxy, CAST(m AS DOUBLE) * CAST(sdd AS DOUBLE) - CAST(sd AS DOUBLE) * CAST(sd AS DOUBLE) AS cyy FROM f), g2 AS (SELECT *, cxy / cxx AS rho, (cyy - cxy * cxy / cxx) / CAST(m AS DOUBLE) AS sse FROM g), g3 AS (SELECT *, sqrt(sse / (CAST(m AS DOUBLE) - 2.0) * CAST(m AS DOUBLE) / cxx) AS se FROM g2) SELECT CAST(nn AS BIGINT) AS n, CASE WHEN cxx0 > 0.0 THEN round(beta, 6) END AS beta, CASE WHEN cxx0 > 0.0 THEN round(alpha, 6) END AS alpha, CASE WHEN cxx0 > 0.0 AND m >= 4 AND cxx > 0.0 AND sse > 0.0 THEN round(rho, 6) END AS rho, CASE WHEN cxx0 > 0.0 AND m >= 4 AND cxx > 0.0 AND sse > 0.0 THEN round(rho / se, 6) END AS df_stat, CASE WHEN cxx0 > 0.0 AND m >= 4 AND cxx > 0.0 AND sse > 0.0 THEN rho / se < -3.34 END AS cointegrated FROM g3""",
-    "q02_silver_category" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice, CASE WHEN o_totalprice < 50000 THEN 'low' WHEN o_totalprice < 150000 THEN 'mid' WHEN o_totalprice < 300000 THEN 'high' ELSE 'vip' END AS price_category, strftime(o_orderdate, '%Y-%m-%d') AS date_id FROM orders WHERE o_orderstatus = 'O' ORDER BY o_orderkey""",
-    "q03_gold_union" ->
-      """SELECT * FROM (SELECT o_orderkey, o_custkey, o_totalprice, 'urgent' AS branch, 'NA' AS region FROM orders WHERE o_orderpriority = '1-URGENT' UNION ALL SELECT o_orderkey, o_custkey, o_totalprice, 'high' AS branch, 'NA' AS region FROM orders WHERE o_orderpriority = '2-HIGH') ORDER BY o_orderkey""",
-    "q04_delete_insert" ->
-      s"""WITH daily AS (SELECT strftime(ts, '%Y-%m-%d') AS date_id, event_type, COUNT(*) AS n_events, $SUMV AS total_value FROM events GROUP BY 1, 2), mx AS (SELECT MAX(date_id) AS d FROM daily), refresh AS (SELECT strftime(ts, '%Y-%m-%d') AS date_id, event_type, COUNT(*) AS n_events, $SUMV AS total_value FROM events WHERE event_type <> 'error' AND strftime(ts, '%Y-%m-%d') = (SELECT d FROM mx) GROUP BY 1, 2) SELECT * FROM (SELECT date_id, event_type, n_events, total_value FROM daily WHERE date_id <> (SELECT d FROM mx) UNION ALL SELECT date_id, event_type, n_events, total_value FROM refresh) ORDER BY date_id, event_type""",
-    "q05_schema_enforce" ->
-      """SELECT CAST(p_partkey AS BIGINT) AS p_partkey, trim(p_name) AS p_name, p_brand, p_type, CAST(p_size AS BIGINT) AS p_size, CAST(CAST(p_retailprice AS DECIMAL(12,2)) AS DOUBLE) AS p_retailprice FROM part ORDER BY p_partkey""",
-    "q06_jdbc_sink" ->
-      """SELECT o_orderkey, c_name, n_name AS nation, o_totalprice, strftime(o_orderdate, '%Y-%m-%d') AS date_id FROM orders JOIN customer ON o_custkey = c_custkey JOIN nation ON c_nationkey = n_nationkey WHERE o_orderstatus = 'F' ORDER BY o_orderkey""",
-    "q07_agg_full" ->
-      """SELECT l_returnflag, l_linestatus, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price, CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price, COUNT(*) AS count_order, COUNT(DISTINCT l_orderkey) AS n_orders FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00' GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""",
-    "q08_filter_pushdown" ->
-      """SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) AS DOUBLE) AS revenue, COUNT(*) AS n_rows FROM lineitem WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00' AND l_shipdate < TIMESTAMP '1997-01-01 00:00:00' AND l_discount BETWEEN 0.02 AND 0.08 AND l_quantity < 25""",
-    "q09_join_broadcast" ->
-      """SELECT r_name, n_name, COUNT(*) AS n_customers, CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_acctbal FROM customer JOIN nation ON c_nationkey = n_nationkey JOIN region ON n_regionkey = r_regionkey GROUP BY r_name, n_name ORDER BY r_name, n_name""",
-    "q10_join_multiway" ->
-      """SELECT n_name, CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue FROM lineitem JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey JOIN supplier ON l_suppkey = s_suppkey JOIN nation ON s_nationkey = n_nationkey JOIN region ON n_regionkey = r_regionkey WHERE r_name = 'ASIA' AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00' GROUP BY n_name ORDER BY revenue DESC, n_name""",
-    "q11_window" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, rn, running_total FROM (SELECT o_custkey, o_orderkey, o_totalprice, ROW_NUMBER() OVER w AS rn, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_total FROM orders WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey)) WHERE rn <= 3 ORDER BY o_custkey, rn""",
-    "q12_semi_anti" ->
-      """SELECT c_custkey, c_name FROM customer c WHERE EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_orderstatus = 'F') AND NOT EXISTS (SELECT 1 FROM orders o2 WHERE o2.o_custkey = c.c_custkey AND o2.o_orderstatus = 'P') ORDER BY c_custkey""",
-    "q13_distinct_topk" ->
-      """SELECT DISTINCT o_custkey, o_orderpriority FROM orders ORDER BY o_custkey, o_orderpriority LIMIT 100""",
-    "q14_events_hourly" ->
-      s"""SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type, COUNT(*) AS n, $SUMV AS total_value FROM events GROUP BY 1, 2 ORDER BY hour, event_type""",
-    "q15_sessionize" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), s AS (SELECT user_id, event_id, sec, CASE WHEN lag(sec) OVER w IS NULL OR sec - lag(sec) OVER w > 1800 THEN 1 ELSE 0 END AS new_s FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)), t AS (SELECT user_id, sec, CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY sec, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id FROM s) SELECT user_id, session_id, COUNT(*) AS n_events, MIN(sec) AS start_sec, MAX(sec) AS end_sec FROM t GROUP BY user_id, session_id ORDER BY user_id, session_id""",
-    "q16_pivot" ->
-      """SELECT user_id, CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click, CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_view, CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase, CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup, CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error, CAST(SUM(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(18,2)) ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS purchase_value FROM events GROUP BY user_id ORDER BY user_id""",
-    "q17_rollup" ->
-      """SELECT COALESCE(r_name, 'ALL') AS region_name, COALESCE(n_name, 'ALL') AS nation_name, COUNT(*) AS n, CAST(SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS total_bal FROM customer JOIN nation ON c_nationkey = n_nationkey JOIN region ON n_regionkey = r_regionkey GROUP BY ROLLUP (r_name, n_name) ORDER BY region_name, nation_name""",
-    "q18_quantiles" ->
-      """SELECT o_orderpriority, MAX(CASE WHEN rn = CAST(ceil(cnt * 0.5) AS BIGINT) THEN o_totalprice END) AS p50, MAX(CASE WHEN rn = CAST(ceil(cnt * 0.9) AS BIGINT) THEN o_totalprice END) AS p90, MAX(cnt) AS n FROM (SELECT o_orderpriority, o_totalprice, ROW_NUMBER() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey) AS rn, COUNT(*) OVER (PARTITION BY o_orderpriority) AS cnt FROM orders) GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "q19_skew_salted_agg" ->
-      s"""SELECT user_id, COUNT(*) AS n, $SUMV AS total FROM events GROUP BY user_id ORDER BY user_id""",
-    "q20_asof_join" ->
-      """WITH p AS (SELECT user_id, event_id, value, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events WHERE event_type = 'purchase'), c AS (SELECT user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS csec, MAX(event_id) AS click_id FROM events WHERE event_type = 'click' GROUP BY 1, 2) SELECT p.user_id, p.event_id, p.value, c.click_id AS attributed_click FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.sec >= c.csec ORDER BY p.user_id, p.event_id""",
-    "q21_dedup_exact" ->
-      """SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS text_hash, COUNT(*) AS n_copies, MIN(doc_id) AS keep_id FROM documents GROUP BY 1 ORDER BY keep_id""",
-    "q26_knn_brute" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 10), s AS (SELECT q.qid, e.vec_id AS nid, list_cosine_similarity(q.qv, e.embedding) AS cos FROM q CROSS JOIN embeddings e WHERE e.vec_id <> q.qid), r AS (SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rnk FROM s) SELECT qid, rnk, nid FROM r WHERE rnk <= 10 ORDER BY qid, rnk""",
-    "q28_vec_stats" ->
-      """WITH n AS (SELECT vec_id, label, sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) AS nrm FROM embeddings), r AS (SELECT label, vec_id, ROW_NUMBER() OVER (PARTITION BY label ORDER BY nrm DESC, vec_id) AS rnk, COUNT(*) OVER (PARTITION BY label) AS n_vecs FROM n) SELECT label, n_vecs, vec_id AS top_norm_vec FROM r WHERE rnk = 1 ORDER BY label""",
-    "q29_text_stats" ->
-      """SELECT doc_id, length(text) AS n_chars_m, CAST(array_length(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS BIGINT) AS n_words, CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS BIGINT) AS n_alpha, CAST(length(text) - length(regexp_replace(text, '[^a-zA-Z0-9 ]', '', 'g')) AS BIGINT) AS n_punct, (length(' ' || lower(text) || ' ') - length(replace(' ' || lower(text) || ' ', ' the ', ' '))) / 4 + (length(' ' || lower(text) || ' ') - length(replace(' ' || lower(text) || ' ', ' a ', ' '))) / 2 + (length(' ' || lower(text) || ' ') - length(replace(' ' || lower(text) || ' ', ' and ', ' '))) / 4 + (length(' ' || lower(text) || ' ') - length(replace(' ' || lower(text) || ' ', ' of ', ' '))) / 3 AS stop_cnt, (CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / CAST(length(text) AS DOUBLE)) * 0.5 + (((length(' ' || lower(text) || ' ') - length(replace(' ' || lower(text) || ' ', ' the ', ' '))) / 4 + (length(' ' || lower(text) || ' ') - length(replace(' ' || lower(text) || ' ', ' a ', ' '))) / 2 + (length(' ' || lower(text) || ' ') - length(replace(' ' || lower(text) || ' ', ' and ', ' '))) / 4 + (length(' ' || lower(text) || ' ') - length(replace(' ' || lower(text) || ' ', ' of ', ' '))) / 3) / CAST(array_length(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS DOUBLE)) * 0.5 AS quality FROM documents ORDER BY doc_id""",
-    "q30_langid" ->
-      """WITH m AS (SELECT doc_id, lang, ' ' || lower(text) || ' ' AS p FROM documents), sc AS (SELECT doc_id, lang, (length(p) - length(replace(p, ' the ', ' '))) / 4 + (length(p) - length(replace(p, ' a ', ' '))) / 2 AS s_en, (length(p) - length(replace(p, ' der ', ' '))) / 4 + (length(p) - length(replace(p, ' und ', ' '))) / 4 AS s_de, (length(p) - length(replace(p, ' el ', ' '))) / 3 + (length(p) - length(replace(p, ' los ', ' '))) / 4 AS s_es, (length(p) - length(replace(p, ' le ', ' '))) / 3 + (length(p) - length(replace(p, ' et ', ' '))) / 3 AS s_fr FROM m) SELECT doc_id, s_en, s_de, s_es, s_fr, CASE WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr AND s_en > 0 THEN 'en' WHEN s_de > s_en AND s_de >= s_es AND s_de >= s_fr AND s_de > 0 THEN 'de' WHEN s_es > s_en AND s_es > s_de AND s_es >= s_fr AND s_es > 0 THEN 'es' WHEN s_fr > s_en AND s_fr > s_de AND s_fr > s_es AND s_fr > 0 THEN 'fr' ELSE 'unknown' END AS lang_pred, lang FROM sc ORDER BY doc_id""",
-    "q31_token_count" ->
-      """SELECT doc_id, CAST(array_length(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS BIGINT) AS ws_tokens, CAST(array_length(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS BIGINT) AS bpe_tokens, CAST(length(text) AS DOUBLE) / CAST(array_length(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS DOUBLE) AS chars_per_token FROM documents ORDER BY doc_id""",
-    "q32_fingerprint" ->
-      """SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp FROM documents ORDER BY doc_id""",
-    // height derives from the FIRST UTF-8 BYTE (matching the byte-level
-    // stub decoder), not the first code point: hex(blob)[1:2] → strpos
-    // arithmetic ('0' is absent from the lookup so it maps to 0)
-    "q33_multimodal_meta" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes, CAST(64 + octet_length(encode(text)) % 512 AS BIGINT) AS width, CAST(64 + ((strpos('123456789ABCDEF', substr(hex(encode(text)),1,1)))*16 + strpos('123456789ABCDEF', substr(hex(encode(text)),2,1))) % 512 AS BIGINT) AS height, 3 AS channels, CASE CAST(octet_length(encode(text)) % 3 AS INTEGER) WHEN 0 THEN 'jpeg' WHEN 1 THEN 'png' ELSE 'webp' END AS format FROM documents ORDER BY doc_id""",
-    "q34_json_source" ->
-      """SELECT lang, COUNT(*) AS n_docs, CAST(SUM(length(text)) AS BIGINT) AS total_chars FROM documents GROUP BY lang ORDER BY lang""",
-    "q35_csv_source" ->
-      s"""SELECT event_type, COUNT(*) AS n, $SUMV AS total_value FROM events GROUP BY event_type ORDER BY event_type""",
-    "q36_partition_prune" ->
-      s"""SELECT event_type, COUNT(*) AS n, $SUMV AS total_value FROM events WHERE strftime(ts, '%Y-%m-%d') = (SELECT MAX(strftime(ts, '%Y-%m-%d')) FROM events) GROUP BY event_type ORDER BY event_type""",
-    "q38_bucketed_join" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_orders, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "q51_nested_json" ->
-      """SELECT event_id, value AS v, event_type AS tag0, value AS w0 FROM events ORDER BY event_id""",
-    "q52_rank_family" ->
-      """SELECT o_orderpriority, o_orderkey, o_totalprice, rnk, drnk, prnk, quartile FROM (SELECT o_orderpriority, o_orderkey, o_totalprice, CAST(rank() OVER wv AS INTEGER) AS rnk, CAST(dense_rank() OVER wv AS INTEGER) AS drnk, percent_rank() OVER wv AS prnk, CAST(ntile(4) OVER wt AS INTEGER) AS quartile FROM orders WINDOW wv AS (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC), wt AS (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey)) WHERE rnk <= 20 ORDER BY o_orderpriority, rnk, o_orderkey""",
-    "q49_edit_distance" ->
-      """WITH v AS (SELECT DISTINCT unnest(regexp_split_to_array(trim(text), '\s+')) AS w FROM documents) SELECT a.w AS w_a, b.w AS w_b, CAST(levenshtein(a.w, b.w) AS INTEGER) AS dist FROM v a JOIN v b ON length(b.w) BETWEEN length(a.w) - 1 AND length(a.w) + 1 AND a.w < b.w WHERE levenshtein(a.w, b.w) <= 2 ORDER BY w_a, w_b""",
-    "q50_funnel" ->
-      """WITH f AS (SELECT user_id, MIN(CASE WHEN event_type = 'signup' THEN CAST(epoch_ns(ts) // 1000000000 AS BIGINT) END) AS first_signup, MIN(CASE WHEN event_type = 'view' THEN CAST(epoch_ns(ts) // 1000000000 AS BIGINT) END) AS first_view, MIN(CASE WHEN event_type = 'purchase' THEN CAST(epoch_ns(ts) // 1000000000 AS BIGINT) END) AS first_purchase FROM events GROUP BY user_id) SELECT user_id, first_signup, first_view, first_purchase FROM f WHERE first_signup < first_view AND first_view < first_purchase ORDER BY user_id""",
-    "q46_frame_sample" ->
-      """SELECT doc_id, n_frames, frame_idx, frame_idx * 100 AS frame_offset FROM (SELECT doc_id, octet_length(encode(text)) // 100 AS n_frames, unnest(range(0, CAST(octet_length(encode(text)) // 100 AS INTEGER), 4)) AS frame_idx FROM documents WHERE octet_length(encode(text)) // 100 >= 1) ORDER BY doc_id, frame_idx""",
-    "q47_hash_sample" ->
-      """SELECT doc_id, lang, source FROM documents WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('0','1','2','3') ORDER BY doc_id""",
-    "q48_stratified_sample" ->
-      """SELECT doc_id, lang FROM (SELECT doc_id, lang, ROW_NUMBER() OVER (PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn FROM documents) WHERE rn <= 20 ORDER BY lang, doc_id""",
-    "q44_asof_tolerance" ->
-      """WITH p AS (SELECT user_id, event_id, value, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events WHERE event_type = 'purchase'), c AS (SELECT user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS csec, MAX(event_id) AS click_id FROM events WHERE event_type = 'click' GROUP BY 1, 2) SELECT p.user_id, p.event_id, p.value, CASE WHEN p.sec - c.csec <= 3600 THEN c.click_id END AS attributed_click FROM p ASOF LEFT JOIN c ON p.user_id = c.user_id AND p.sec >= c.csec ORDER BY p.user_id, p.event_id""",
-    "q45_range_window" ->
-      """SELECT user_id, event_id, sec, CAST(SUM(v) OVER w AS DOUBLE) AS trailing_1h_sum, CAST(COUNT(*) OVER w AS BIGINT) AS trailing_1h_n FROM (SELECT user_id, event_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec, CAST(value AS DECIMAL(18,2)) AS v FROM events) WINDOW w AS (PARTITION BY user_id ORDER BY sec RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) ORDER BY user_id, event_id""",
-    "q41_cube" ->
-      """SELECT COALESCE(o_orderstatus, 'ALL') AS status, COALESCE(o_orderpriority, 'ALL') AS priority, COUNT(*) AS n, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority) ORDER BY status, priority""",
-    "q42_explode_words" ->
-      """SELECT word, COUNT(*) AS n, COUNT(DISTINCT doc_id) AS n_docs FROM (SELECT doc_id, unnest(regexp_split_to_array(trim(text), '\s+')) AS word FROM documents) GROUP BY word ORDER BY word""",
-    "q43_scalar_subquery" ->
-      """WITH a AS (SELECT o_custkey AS k, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_price FROM orders GROUP BY o_custkey) SELECT o_orderkey, o_custkey, o_totalprice, avg_price FROM orders JOIN a ON o_custkey = k WHERE o_totalprice > avg_price ORDER BY o_orderkey""",
-    // q40's k-means replay restricted to the BASE corpus (vec_id % 5 <> 0)
-    // for seeding and both Lloyd iterations; the final cell assignment
-    // covers ALL vectors — exactly what build + append materializes
-    "q167_ivf_append" ->
-      s"""$VEC_MACROS; WITH c0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec FROM (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 5 <> 0 ORDER BY vec_id LIMIT 16)), a1 AS (${ivfAssignSql("c0", "WHERE vec_id % 5 <> 0")}), c1 AS (${ivfRecomputeSql("c0", "a1")}), a2 AS (${ivfAssignSql("c1", "WHERE vec_id % 5 <> 0")}), c2 AS (${ivfRecomputeSql("c1", "a2")}), cells AS (${ivfAssignSql("c2")}), probes AS (SELECT qid, cid FROM (SELECT q.vec_id AS qid, c.cid, ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY pcos(q.embedding, c.cvec) DESC NULLS LAST, c.cid) AS rnk FROM embeddings q CROSS JOIN c2 c WHERE q.vec_id < 10) WHERE rnk <= 2), cand AS (SELECT DISTINCT p.qid, s.vec_id AS nid FROM probes p JOIN cells s ON p.cid = s.cid WHERE s.vec_id <> p.qid), scored AS (SELECT c.qid, c.nid, round(pcos(qe.embedding, ne.embedding), 4) AS cos_r FROM cand c JOIN embeddings qe ON qe.vec_id = c.qid JOIN embeddings ne ON ne.vec_id = c.nid), r AS (SELECT qid, nid, cos_r, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_r DESC NULLS LAST, nid) AS rnk FROM scored) SELECT qid, rnk, nid, cos_r FROM r WHERE rnk <= 5 ORDER BY qid, rnk""",
-    "q188_pq_ann" -> pqOracleSql,
-    "q195_ivf_pq" -> ivfPqOracleSql,
-    "q208_pq_append" -> pqAppendOracleSql,
-    // brute-force all-pairs Jaccard: the prefix filter must be LOSSLESS,
-    // so the oracle deliberately ignores it
-    "q210_set_similarity" ->
-      s"""$HASH_MACROS; WITH w AS (SELECT doc_id, list_sort(list_distinct(docwords(text))) AS toks FROM documents WHERE doc_id < 500), p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.toks, b.toks))) AS DOUBLE) AS jac FROM w a JOIN w b ON a.doc_id < b.doc_id) SELECT id_a, id_b, round(jac, 6) AS jaccard FROM p WHERE jac >= 0.9 ORDER BY id_a, id_b""",
-    "q214_bloom_index" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders WHERE o_orderkey IN (SELECT o_orderkey FROM orders ORDER BY o_orderkey DESC LIMIT 3) ORDER BY o_orderkey""",
-    // lower weighted-quantile: cumulative quantity in (value, tiebreak)
-    // order; the integer-space threshold 100*cumw >= p*W replays exactly
-    "q218_weighted_quantile" ->
-      """WITH b AS (SELECT l_returnflag, l_extendedprice, CAST(l_quantity AS BIGINT) AS w, SUM(CAST(l_quantity AS BIGINT)) OVER (PARTITION BY l_returnflag ORDER BY l_extendedprice, l_orderkey ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw, SUM(CAST(l_quantity AS BIGINT)) OVER (PARTITION BY l_returnflag) AS tw FROM lineitem) SELECT l_returnflag, MIN(CASE WHEN cw * 100 >= tw * 50 THEN l_extendedprice END) AS p50_w, MIN(CASE WHEN cw * 100 >= tw * 90 THEN l_extendedprice END) AS p90_w, CAST(MAX(tw) AS BIGINT) AS total_weight FROM b GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q217_k_anonymize" ->
-      """WITH sz AS (SELECT c_nationkey, c_mktsegment, COUNT(*) AS cn FROM customer GROUP BY 1, 2), a AS (SELECT CASE WHEN cn >= 5 THEN CAST(c.c_nationkey AS VARCHAR) ELSE '*' END AS c_nationkey_anon, CASE WHEN cn >= 5 THEN c.c_mktsegment ELSE '*' END AS c_mktsegment_anon, cn < 5 AS suppressed, c.c_acctbal FROM customer c JOIN sz ON c.c_nationkey = sz.c_nationkey AND c.c_mktsegment = sz.c_mktsegment) SELECT c_nationkey_anon, c_mktsegment_anon, suppressed, COUNT(*) AS n, CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS total_bal FROM a GROUP BY 1, 2, 3 ORDER BY c_nationkey_anon, c_mktsegment_anon""",
-    // both retrievals replayed (q26's exact rank, q27's banded LSH at
-    // k=10), then the per-query overlap — recall itself is hash-exact
-    "q215_ann_recall" ->
-      s"""$VEC_MACROS; WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings WHERE vec_id < 10), s AS (SELECT q.qid, e.vec_id AS nid, list_cosine_similarity(q.qv, e.embedding) AS cos FROM q CROSS JOIN embeddings e WHERE e.vec_id <> q.qid), ex AS (SELECT qid, nid FROM (SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rnk FROM s) WHERE rnk <= 10), sigs AS (SELECT vec_id, embedding, ${sigExpr(0)} AS b0, ${sigExpr(8)} AS b1 FROM embeddings), cand AS (SELECT DISTINCT qc.vec_id AS qid, e.vec_id AS nid, round(pcos(qc.embedding, e.embedding), 4) AS cos_r FROM sigs qc JOIN sigs e ON (qc.b0 = e.b0 OR qc.b1 = e.b1) AND qc.vec_id <> e.vec_id WHERE qc.vec_id < 10), ap AS (SELECT qid, nid FROM (SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_r DESC NULLS LAST, nid) AS rnk FROM cand) WHERE rnk <= 10) SELECT ex.qid, COUNT(*) AS n_exact, CAST(COUNT(ap.nid) AS BIGINT) AS n_hit, round(COUNT(ap.nid) / CAST(COUNT(*) AS DOUBLE), 6) AS recall FROM ex LEFT JOIN ap ON ex.qid = ap.qid AND ex.nid = ap.nid GROUP BY ex.qid ORDER BY ex.qid""",
-    // restored head = the first two thirds untouched; pre-restore v4 =
-    // those thirds after the price-cap DELETE plus the negated bad load
-    "q213_restore" ->
-      """WITH base AS (SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders), head AS (SELECT 'restored_head' AS snap, o_orderstatus, COUNT(*) AS n, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total FROM base WHERE o_orderkey % 3 IN (0, 1) GROUP BY o_orderstatus), v4 AS (SELECT 'pre_restore_v4' AS snap, o_orderstatus, COUNT(*) AS n, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total FROM (SELECT o_orderstatus, o_totalprice FROM base WHERE o_orderkey % 3 IN (0, 1) AND o_totalprice <= 200000.0 UNION ALL SELECT o_orderstatus, -o_totalprice FROM base WHERE o_orderkey % 3 = 2) GROUP BY o_orderstatus) SELECT snap, o_orderstatus, n, total FROM head UNION ALL SELECT snap, o_orderstatus, n, total FROM v4 ORDER BY snap, o_orderstatus""",
-    // metadata-only counts: per-commit slices replay as plain GROUP BY
-    // counts, the erasure total as the kept-rows count (DV deletes where
-    // TRUE; <= keeps the false side, and the column is non-null here)
-    "q212_log_count" ->
-      """SELECT 'commit:' || o_orderpriority AS slice, COUNT(*) AS n FROM orders GROUP BY o_orderpriority UNION ALL SELECT 'total_after_erasure' AS slice, COUNT(*) AS n FROM orders WHERE o_totalprice <= 250000.0 ORDER BY slice""",
-    // line-level boilerplate removal: the word-window "lines", the
-    // distinct-doc frequency and the in-order reassembly all replay
-    // exactly; string_agg skips the CASE's NULLs like collect_list does
-    "q211_line_dedup" ->
-      """WITH w AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS ws FROM documents), l0 AS (SELECT doc_id, unnest(ws) AS word, generate_subscripts(ws, 1) AS wp FROM w), l AS (SELECT doc_id, (wp - 1) // 8 AS line_no, string_agg(word, ' ' ORDER BY wp) AS line FROM l0 GROUP BY doc_id, (wp - 1) // 8), df AS (SELECT line, COUNT(DISTINCT doc_id) AS line_df FROM l GROUP BY line), j AS (SELECT l.doc_id, l.line_no, l.line, df.line_df FROM l JOIN df USING (line)) SELECT doc_id, COUNT(*) AS n_lines, CAST(SUM(CASE WHEN line_df < 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_kept, md5(coalesce(string_agg(CASE WHEN line_df < 2 THEN line END, ' ' ORDER BY line_no), '')) AS clean_md5 FROM j GROUP BY doc_id ORDER BY doc_id""",
-    "q209_hybrid_rrf" ->
-      s"""$HASH_MACROS; $VEC_MACROS; WITH t AS (SELECT docwords(text)[1] AS term FROM documents WHERE doc_id = 0), lex AS (SELECT doc_id, rl FROM (SELECT doc_id, tf, ROW_NUMBER() OVER (ORDER BY tf DESC, doc_id) AS rl FROM (SELECT doc_id, CAST(len(list_filter(docwords(text), w5 -> w5 = t.term)) AS BIGINT) AS tf FROM documents, t) WHERE tf > 0) WHERE rl <= 100), vec AS (SELECT doc_id, rv FROM (SELECT e.vec_id AS doc_id, ROW_NUMBER() OVER (ORDER BY round(pcos(e.embedding, q.embedding), 4) DESC, e.vec_id) AS rv FROM embeddings e, (SELECT embedding FROM embeddings WHERE vec_id = 0) q) WHERE rv <= 100) SELECT COALESCE(lex.doc_id, vec.doc_id) AS doc_id, COALESCE(round(1.0 / (60 + rl), 9), 0.0) + COALESCE(round(1.0 / (60 + rv), 9), 0.0) AS rrf FROM lex FULL OUTER JOIN vec ON lex.doc_id = vec.doc_id ORDER BY rrf DESC, doc_id LIMIT 20""",
-    "q189_sliding_bitmap" ->
-      """WITH pairs AS (SELECT DISTINCT event_type, epoch_ns(ts)//1000000000//3600 AS hour_id, user_id FROM events), ticks AS (SELECT DISTINCT event_type, hour_id FROM pairs) SELECT t.event_type, t.hour_id, CAST((SELECT COUNT(DISTINCT p.user_id) FROM pairs p WHERE p.event_type = t.event_type AND p.hour_id BETWEEN t.hour_id - 5 AND t.hour_id) AS BIGINT) AS n_distinct FROM ticks t ORDER BY event_type, hour_id""",
-    "q190_bfs_hops" ->
-      """WITH RECURSIVE pairs AS (SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp FROM lineitem JOIN orders ON l_orderkey = o_orderkey), ed AS (SELECT cust AS src, -supp AS dst FROM pairs UNION ALL SELECT -supp AS src, cust AS dst FROM pairs), src AS (SELECT c_custkey AS node FROM customer WHERE c_nationkey = 0), walk(node, hops) AS (SELECT node, 0 FROM src UNION SELECT ed.dst, w.hops + 1 FROM walk w JOIN ed ON ed.src = w.node WHERE w.hops < 4) SELECT node, CAST(MIN(hops) AS BIGINT) AS hops FROM walk GROUP BY node ORDER BY node""",
-    "q191_interpolate" ->
-      """WITH hourly AS (SELECT user_id, epoch_ns(ts)//1000000000//3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS hv FROM events GROUP BY 1, 2), bounds AS (SELECT user_id, MIN(hid) AS lo, MAX(hid) AS hi FROM hourly GROUP BY 1), spine AS (SELECT user_id, unnest(range(lo, hi + 1)) AS hid FROM bounds), j AS (SELECT s.user_id, s.hid, h.hv FROM spine s LEFT JOIN hourly h ON s.user_id = h.user_id AND s.hid = h.hid), w AS (SELECT user_id, hid, hv, last_value(hv IGNORE NULLS) OVER wp AS pv, last_value(CASE WHEN hv IS NOT NULL THEN hid END IGNORE NULLS) OVER wp AS ph, first_value(hv IGNORE NULLS) OVER wn AS nv, first_value(CASE WHEN hv IS NOT NULL THEN hid END IGNORE NULLS) OVER wn AS nh FROM j WINDOW wp AS (PARTITION BY user_id ORDER BY hid ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), wn AS (PARTITION BY user_id ORDER BY hid ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)) SELECT user_id, hid, hv IS NOT NULL AS observed, CASE WHEN hv IS NOT NULL THEN hv ELSE pv + (nv - pv) * ((hid - ph) / (nh - ph)) END AS v_interp FROM w ORDER BY user_id, hid""",
-    "q192_deletion_vectors" ->
-      """SELECT 'before_dv' AS snap, o_orderstatus, COUNT(*) AS n, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total FROM orders GROUP BY o_orderstatus UNION ALL SELECT 'after_dv' AS snap, o_orderstatus, COUNT(*) AS n, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total FROM orders WHERE NOT (o_orderstatus = 'F' AND o_totalprice > 150000.0) GROUP BY o_orderstatus ORDER BY snap, o_orderstatus""",
-    "q196_key_index" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice FROM orders WHERE o_orderkey IN (SELECT o_orderkey FROM orders ORDER BY o_orderkey LIMIT 3) ORDER BY o_orderkey""",
-    "q206_stream_dv_erasure" ->
-      """SELECT c_mktsegment, COUNT(*) AS n, CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS total_bal FROM customer WHERE c_custkey NOT IN (SELECT DISTINCT user_id FROM events WHERE event_type = 'error') GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "q205_phrase_index" ->
-      s"""$HASH_MACROS; WITH w AS (SELECT doc_id, docwords(text) AS ws FROM documents), q AS (SELECT ws[1] AS t0, ws[2] AS t1 FROM w WHERE doc_id = 0), m AS (SELECT d.doc_id, CAST(len(list_filter(range(1, len(d.ws)), i4 -> d.ws[i4] = q.t0 AND d.ws[i4+1] = q.t1)) AS BIGINT) AS n_occ FROM w d, q) SELECT doc_id, n_occ FROM m WHERE n_occ > 0 ORDER BY doc_id""",
-    "q204_winsorize" ->
-      """WITH r AS (SELECT o_orderpriority, o_totalprice, ROW_NUMBER() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey) AS rn, COUNT(*) OVER (PARTITION BY o_orderpriority) AS cnt FROM orders), b AS (SELECT o_orderpriority, MAX(CASE WHEN rn = CAST(ceil(cnt * 0.05) AS BIGINT) THEN o_totalprice END) AS p5, MAX(CASE WHEN rn = CAST(ceil(cnt * 0.95) AS BIGINT) THEN o_totalprice END) AS p95 FROM r GROUP BY 1) SELECT o.o_orderpriority, COUNT(*) AS n, CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_raw, CAST(SUM(CAST(least(greatest(o.o_totalprice, b.p5), b.p95) AS DECIMAL(18,2))) AS DOUBLE) AS sum_winsorized FROM orders o JOIN b ON o.o_orderpriority = b.o_orderpriority GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""",
-    "q203_topk_aggregator" ->
-      """SELECT c_mktsegment, rnk, o_orderkey, o_totalprice FROM (SELECT c_mktsegment, o_orderkey, o_totalprice, ROW_NUMBER() OVER (PARTITION BY c_mktsegment ORDER BY o_totalprice DESC, o_orderkey) AS rnk FROM orders JOIN customer ON o_custkey = c_custkey) WHERE rnk <= 3 ORDER BY c_mktsegment, rnk""",
-    "q202_quarantine" ->
-      """WITH inj AS (SELECT o_orderkey, CASE WHEN o_orderkey % 103 = 0 THEN NULL ELSE o_orderstatus END AS o_orderstatus, CASE WHEN o_orderkey % 101 = 0 THEN -o_totalprice ELSE o_totalprice END AS o_totalprice FROM orders), split AS (SELECT *, coalesce(o_totalprice > 0, false) AND coalesce(o_orderstatus IS NOT NULL, false) AS ok, concat_ws(',', CASE WHEN NOT coalesce(o_totalprice > 0, false) THEN 'price_positive' END, CASE WHEN NOT coalesce(o_orderstatus IS NOT NULL, false) THEN 'status_present' END) AS reasons FROM inj) SELECT 'main' AS part, o_orderstatus AS key, COUNT(*) AS n, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total FROM split WHERE ok GROUP BY o_orderstatus UNION ALL SELECT 'quarantine' AS part, reasons AS key, COUNT(*) AS n, CAST(NULL AS DOUBLE) AS total FROM split WHERE NOT ok GROUP BY reasons ORDER BY part, key""",
-    "q201_ivm_agg_join" ->
-      """SELECT substr(CAST(o_orderdate AS VARCHAR), 1, 7) AS month_id, n_name, COUNT(*) AS n_orders, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue FROM orders JOIN customer ON o_custkey = c_custkey JOIN nation ON c_nationkey = n_nationkey GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q199_negative_sample" ->
-      """WITH mx AS (SELECT MAX(doc_id) AS mx FROM documents), anchors AS (SELECT doc_id AS anchor FROM documents WHERE doc_id < 20), cand AS (SELECT anchor, u.j, CAST(CAST(concat('0x', substr(md5(concat(CAST(anchor AS VARCHAR), ':', CAST(u.j AS VARCHAR))), 1, 8)) AS BIGINT) % (mx + 1) AS BIGINT) AS neg FROM anchors, mx, LATERAL (SELECT unnest(range(0, 10)) AS j) u), ex AS (SELECT c.anchor, c.j, c.neg FROM cand c JOIN (SELECT DISTINCT doc_id FROM documents) d ON c.neg = d.doc_id WHERE c.neg <> c.anchor), dd AS (SELECT anchor, j, neg, ROW_NUMBER() OVER (PARTITION BY anchor, neg ORDER BY j) AS r1 FROM ex), rk AS (SELECT anchor, j, neg, ROW_NUMBER() OVER (PARTITION BY anchor ORDER BY j, neg) AS neg_rank FROM dd WHERE r1 = 1) SELECT anchor, neg_rank, neg FROM rk WHERE neg_rank <= 5 ORDER BY anchor, neg_rank""",
-    "q198_reconcile_repair" ->
-      """SELECT c_mktsegment, COUNT(*) AS n, CAST(SUM(CAST(c_acctbal AS DECIMAL(12,2))) AS DOUBLE) AS total_bal FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "q197_bitmap_algebra" ->
-      """WITH ut AS (SELECT DISTINCT event_type, user_id FROM events), t AS (SELECT event_type, COUNT(*) AS n FROM ut GROUP BY 1), p AS (SELECT a.event_type AS ga, a.n AS n_a, b.event_type AS gb, b.n AS n_b FROM t a JOIN t b ON a.event_type < b.event_type), ib AS (SELECT x.event_type AS ga, y.event_type AS gb, COUNT(*) AS n_both FROM ut x JOIN ut y ON x.user_id = y.user_id AND x.event_type < y.event_type GROUP BY 1, 2) SELECT p.ga, p.gb, p.n_a, p.n_b, COALESCE(ib.n_both, 0) AS n_both, p.n_a + p.n_b - COALESCE(ib.n_both, 0) AS n_union, p.n_a - COALESCE(ib.n_both, 0) AS n_only_a, p.n_b - COALESCE(ib.n_both, 0) AS n_only_b FROM p LEFT JOIN ib ON p.ga = ib.ga AND p.gb = ib.gb ORDER BY p.ga, p.gb""",
-    "q193_scene_cuts" ->
-      """WITH p AS (SELECT doc_id, hex(encode(text)) AS hx FROM documents WHERE doc_id <= 200), f AS (SELECT doc_id, unnest(range(0, greatest(length(hx) // 2, 1), 256)) AS off, hx FROM p WHERE length(hx) > 0), fr AS (SELECT doc_id, CAST(off // 256 AS BIGINT) AS frame_idx, substring(hx, CAST(off * 2 + 1 AS BIGINT), 512) AS h FROM f), lg AS (SELECT doc_id, frame_idx, h, lag(h) OVER (PARTITION BY doc_id ORDER BY frame_idx) AS hp FROM fr), df AS (SELECT doc_id, frame_idx, h, hp, CASE WHEN hp IS NULL THEN NULL ELSE CAST(list_reduce(list_prepend(0, list_transform(range(0, least(length(h), length(hp)) // 2), i3 -> CASE WHEN substring(h, CAST(i3 * 2 + 1 AS INTEGER), 2) = substring(hp, CAST(i3 * 2 + 1 AS INTEGER), 2) THEN 0 ELSE 1 END)), (a3, b3) -> a3 + b3) + abs(length(h) - length(hp)) // 2 AS BIGINT) END AS diff_bytes FROM lg) SELECT doc_id, frame_idx, CAST(length(h) // 2 AS BIGINT) AS frame_len, diff_bytes, (hp IS NULL OR diff_bytes > 0.5 * (length(h) / 2.0)) AS is_cut FROM df ORDER BY doc_id, frame_idx""",
-    "q194_unigram_surprisal" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w FROM documents), c AS (SELECT w, COUNT(*) AS c FROM w GROUP BY 1), t AS (SELECT CAST(SUM(c) AS DOUBLE) AS n_total FROM c), s AS (SELECT doc_id, CAST(round(ln(n_total / CAST(c AS DOUBLE)), 9) AS DECIMAL(28,9)) AS nll FROM w JOIN c USING (w) CROSS JOIN t) SELECT doc_id, COUNT(*) AS n_words, round(CAST(SUM(nll) AS DOUBLE) / COUNT(*), 6) AS avg_nll FROM s GROUP BY doc_id ORDER BY doc_id""",
-    // the full 2-iteration deterministic k-means replayed in SQL, validated
-    // against the Spark dump at all three SFs in tools/proto_ivf_oracle.py
-    "q40_ann_ivf" ->
-      s"""$VEC_MACROS; WITH c0 AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 16)), a1 AS (${ivfAssignSql("c0")}), c1 AS (${ivfRecomputeSql("c0", "a1")}), a2 AS (${ivfAssignSql("c1")}), c2 AS (${ivfRecomputeSql("c1", "a2")}), cells AS (${ivfAssignSql("c2")}), probes AS (SELECT qid, cid FROM (SELECT q.vec_id AS qid, c.cid, ROW_NUMBER() OVER (PARTITION BY q.vec_id ORDER BY pcos(q.embedding, c.cvec) DESC NULLS LAST, c.cid) AS rnk FROM embeddings q CROSS JOIN c2 c WHERE q.vec_id < 10) WHERE rnk <= 2), cand AS (SELECT DISTINCT p.qid, s.vec_id AS nid FROM probes p JOIN cells s ON p.cid = s.cid WHERE s.vec_id <> p.qid), scored AS (SELECT c.qid, c.nid, round(pcos(qe.embedding, ne.embedding), 4) AS cos_r FROM cand c JOIN embeddings qe ON qe.vec_id = c.qid JOIN embeddings ne ON ne.vec_id = c.nid), r AS (SELECT qid, nid, cos_r, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_r DESC NULLS LAST, nid) AS rnk FROM scored) SELECT qid, rnk, nid, cos_r FROM r WHERE rnk <= 5 ORDER BY qid, rnk""",
-    "q75_salted_join" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_orders, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "q76_weighted_sample" ->
-      s"""WITH q AS (SELECT doc_id, lang, $QUALITY_SQL AS quality FROM documents) SELECT doc_id, lang, round(quality, 6) AS quality_r FROM q WHERE CAST(CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT) AS DOUBLE) / 4294967296.0 < least(greatest(quality, 0.0), 1.0) ORDER BY doc_id""",
-    "q90_corrupt_ingest" ->
-      """SELECT 'corrupt' AS status, COUNT(*) AS n, CAST(0 AS BIGINT) AS n_langs, CAST(NULL AS BIGINT) AS total_chars FROM documents WHERE doc_id % 2 = 1 UNION ALL SELECT 'valid' AS status, COUNT(*) AS n, COUNT(DISTINCT lang) AS n_langs, CAST(SUM(n_chars) AS BIGINT) AS total_chars FROM documents WHERE doc_id % 2 = 0 ORDER BY status""",
-    "q91_prep_pipeline" ->
-      """WITH s AS (SELECT doc_id, text, ' ' || lower(text) || ' ' AS p, CAST(array_length(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS BIGINT) AS n_words, CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / CAST(length(text) AS DOUBLE) AS alpha_ratio, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp FROM documents), sc AS (SELECT doc_id, text, n_words, alpha_ratio, fp, (length(p) - length(replace(p, ' the ', ' '))) / 4 + (length(p) - length(replace(p, ' a ', ' '))) / 2 AS s_en, (length(p) - length(replace(p, ' der ', ' '))) / 4 + (length(p) - length(replace(p, ' und ', ' '))) / 4 AS s_de, (length(p) - length(replace(p, ' el ', ' '))) / 3 + (length(p) - length(replace(p, ' los ', ' '))) / 4 AS s_es, (length(p) - length(replace(p, ' le ', ' '))) / 3 + (length(p) - length(replace(p, ' et ', ' '))) / 3 AS s_fr FROM s), l AS (SELECT doc_id, text, n_words, alpha_ratio, fp, CASE WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr AND s_en > 0 THEN 'en' WHEN s_de > s_en AND s_de >= s_es AND s_de >= s_fr AND s_de > 0 THEN 'de' WHEN s_es > s_en AND s_es > s_de AND s_es >= s_fr AND s_es > 0 THEN 'es' WHEN s_fr > s_en AND s_fr > s_de AND s_fr > s_es AND s_fr > 0 THEN 'fr' ELSE 'unknown' END AS lang_pred FROM sc), g AS (SELECT doc_id, text, lang_pred, ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id) AS rn FROM l WHERE n_words >= 10 AND alpha_ratio >= 0.5), kept AS (SELECT doc_id, text, lang_pred, length(text) AS len FROM g WHERE rn = 1), ch AS (SELECT doc_id, lang_pred, text, unnest(range(0, CAST(greatest(CAST(ceil(CAST(len - 400 AS DOUBLE) / 160) AS BIGINT), 0) + 1 AS BIGINT))) AS chunk_idx FROM kept), cm AS (SELECT doc_id, lang_pred, chunk_idx, md5(substr(text, CAST(chunk_idx * 160 + 1 AS INTEGER), 400)) AS chunk_md5 FROM ch), dd AS (SELECT doc_id, lang_pred, ROW_NUMBER() OVER (PARTITION BY chunk_md5 ORDER BY doc_id, chunk_idx) AS rn2 FROM cm) SELECT doc_id, lang_pred, COUNT(*) AS n_chunks_kept FROM dd WHERE rn2 = 1 GROUP BY doc_id, lang_pred ORDER BY doc_id""",
-    "q86_rag_chunking" ->
-      """WITH d AS (SELECT doc_id, text, length(text) AS len FROM documents), c AS (SELECT doc_id, text, unnest(range(0, CAST(greatest(CAST(ceil(CAST(len - 400 AS DOUBLE) / 160) AS BIGINT), 0) + 1 AS BIGINT))) AS chunk_idx FROM d) SELECT doc_id, chunk_idx, chunk_idx * 160 AS chunk_off, CAST(length(substr(text, CAST(chunk_idx * 160 + 1 AS INTEGER), 400)) AS BIGINT) AS chunk_len, md5(substr(text, CAST(chunk_idx * 160 + 1 AS INTEGER), 400)) AS chunk_md5 FROM c ORDER BY doc_id, chunk_idx""",
-    "q87_schema_drift_union" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice, NULL AS o_orderpriority FROM orders WHERE o_orderkey % 2 = 0 UNION ALL SELECT o_orderkey, NULL, o_totalprice, o_orderpriority FROM orders WHERE o_orderkey % 2 = 1 ORDER BY o_orderkey""",
-    "q88_map_roundtrip" ->
-      """WITH c AS (SELECT user_id, event_type, COUNT(*) AS n FROM events GROUP BY 1, 2), t AS (SELECT user_id, COUNT(*) AS n_types FROM c GROUP BY 1) SELECT c.user_id, t.n_types, c.event_type, c.n FROM c JOIN t ON c.user_id = t.user_id ORDER BY c.user_id, c.event_type""",
-    "q89_null_semantics" ->
-      """WITH nl AS (SELECT event_id, user_id, nullif(event_type, 'error') AS et, CASE WHEN value > 50 THEN value END AS big_value FROM events) SELECT user_id, COUNT(*) AS n_rows, COUNT(et) AS n_et, COUNT(big_value) AS n_big, CAST(SUM(CASE WHEN et IS NOT DISTINCT FROM NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_null_safe_eq, CAST(SUM(CAST(coalesce(big_value, 0.0) AS DECIMAL(18,2))) AS DOUBLE) AS big_total FROM nl GROUP BY user_id ORDER BY user_id""",
-    "q82_percentile_interp" ->
-      s"""WITH r AS (SELECT o_orderpriority, o_totalprice, ROW_NUMBER() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey) AS rn, COUNT(*) OVER (PARTITION BY o_orderpriority) AS n FROM orders) SELECT o_orderpriority, ${interpSql("0.25")} AS p25, ${interpSql("0.5")} AS p50, ${interpSql("0.95")} AS p95, MAX(n) AS n FROM r GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "q83_corr_moments" ->
-      """WITH b AS (SELECT o_orderpriority, CAST(o_totalprice AS DECIMAL(18,2)) AS dx, CAST(CAST(date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS DOUBLE) AS DECIMAL(18,2)) AS dy FROM orders), a AS (SELECT o_orderpriority, CAST(COUNT(*) AS DOUBLE) AS n, CAST(SUM(dx) AS DOUBLE) AS sx, CAST(SUM(dy) AS DOUBLE) AS sy, CAST(SUM(dx*dx) AS DOUBLE) AS sxx, CAST(SUM(dy*dy) AS DOUBLE) AS syy, CAST(SUM(dx*dy) AS DOUBLE) AS sxy FROM b GROUP BY 1) SELECT o_orderpriority, CAST(n AS BIGINT) AS n, round((sxy - sx*sy/n) / (sqrt(sxx - sx*sx/n) * sqrt(syy - sy*sy/n)), 9) AS corr_xy, round(sqrt((sxx - sx*sx/n) / (n - 1.0)), 9) AS stddev_x FROM a ORDER BY o_orderpriority""",
-    "q84_minhash_pairs" ->
-      s"""$HASH_MACROS; WITH hs AS ($DOC_HASHES), shingled AS (SELECT doc_id, list_transform(range(CASE WHEN n >= 3 THEN n - 2 ELSE 1 END), p -> shmix(shmix(h[p+1], coalesce(h[p+2], ${padLit(1)})), coalesce(h[p+3], ${padLit(2)}))) AS sh FROM hs), sigs AS (SELECT doc_id AS id, $sigSql AS sig FROM shingled), bands AS (SELECT id, sig, unnest(list_zip([${(0 until 8).map(bandSql).mkString(", ")}], [0,1,2,3,4,5,6,7])) AS z FROM sigs), wb AS (SELECT id, sig, z[2] AS band_idx, z[1] AS band_hash, ROW_NUMBER() OVER (PARTITION BY z[2], z[1] ORDER BY id) AS rn FROM bands), p AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b, CAST(len(list_filter(range(32), i -> a.sig[i+1] = b.sig[i+1])) AS DOUBLE) / 32.0 AS est_jaccard FROM wb a JOIN wb b ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.id < b.id WHERE a.rn <= 64 AND b.rn <= 64) SELECT id_a, id_b, est_jaccard FROM p WHERE est_jaccard >= 0.3 ORDER BY id_a, id_b""",
-    // the q84 candidate chain WITHOUT its threshold, then pure
-    // repeated-squaring s-curves integrated against the sim histogram
-    "q639_lsh_design" ->
-      s"""$HASH_MACROS; WITH hs AS ($DOC_HASHES), shingled AS (SELECT doc_id, list_transform(range(CASE WHEN n >= 3 THEN n - 2 ELSE 1 END), p -> shmix(shmix(h[p+1], coalesce(h[p+2], ${padLit(1)})), coalesce(h[p+3], ${padLit(2)}))) AS sh FROM hs), sigs AS (SELECT doc_id AS id, $sigSql AS sig FROM shingled), bands AS (SELECT id, sig, unnest(list_zip([${(0 until 8).map(bandSql).mkString(", ")}], [0,1,2,3,4,5,6,7])) AS z FROM sigs), wb AS (SELECT id, sig, z[2] AS band_idx, z[1] AS band_hash, ROW_NUMBER() OVER (PARTITION BY z[2], z[1] ORDER BY id) AS rn FROM bands), p AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b, CAST(len(list_filter(range(32), i -> a.sig[i+1] = b.sig[i+1])) AS DOUBLE) / 32.0 AS est_jaccard FROM wb a JOIN wb b ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.id < b.id WHERE a.rn <= 64 AND b.rn <= 64), hist AS (SELECT LEAST(CAST(floor(est_jaccard * 20) AS BIGINT), 19) AS j, CAST(COUNT(*) AS BIGINT) AS nj FROM p WHERE est_jaccard >= 0.0 GROUP BY 1), h2 AS (SELECT j, nj, CAST(2 * j + 1 AS DOUBLE) / 40.0 AS s FROM hist), cf AS (SELECT * FROM (VALUES (32, 1), (16, 2), (8, 4), (4, 8), (2, 16), (1, 32)) v(b, r)), g1 AS (SELECT b, r, nj, s, s * s AS s2 FROM cf CROSS JOIN h2), g2 AS (SELECT *, s2 * s2 AS s4 FROM g1), g3 AS (SELECT *, s4 * s4 AS s8 FROM g2), g4 AS (SELECT *, s8 * s8 AS s16 FROM g3), g5 AS (SELECT *, s16 * s16 AS s32 FROM g4), g6 AS (SELECT *, CASE WHEN r = 1 THEN s WHEN r = 2 THEN s2 WHEN r = 4 THEN s4 WHEN r = 8 THEN s8 WHEN r = 16 THEN s16 ELSE s32 END AS sr FROM g5), g7 AS (SELECT *, 1.0 - sr AS c1 FROM g6), g8 AS (SELECT *, c1 * c1 AS c2 FROM g7), g9 AS (SELECT *, c2 * c2 AS c4 FROM g8), g10 AS (SELECT *, c4 * c4 AS c8 FROM g9), g11 AS (SELECT *, c8 * c8 AS c16 FROM g10), g12 AS (SELECT *, c16 * c16 AS c32 FROM g11), g13 AS (SELECT b, r, nj, s, 1.0 - (CASE WHEN b = 1 THEN c1 WHEN b = 2 THEN c2 WHEN b = 4 THEN c4 WHEN b = 8 THEN c8 WHEN b = 16 THEN c16 ELSE c32 END) AS pp FROM g12), ag AS (SELECT b, r, CAST(SUM(nj) AS BIGINT) AS n_pairs, SUM(CAST(round(pp * CAST(nj AS DOUBLE), 9) AS DECIMAL(28,9))) AS exp_all, CAST(SUM(CASE WHEN s >= 0.7 THEN nj ELSE 0 END) AS BIGINT) AS n_hi, SUM(CASE WHEN s >= 0.7 THEN CAST(round(pp * CAST(nj AS DOUBLE), 9) AS DECIMAL(28,9)) ELSE CAST(0 AS DECIMAL(28,9)) END) AS exp_hi FROM g13 GROUP BY 1, 2) SELECT CAST(b AS BIGINT) AS bands, CAST(r AS BIGINT) AS rows_per_band, n_pairs, round(CAST(exp_all AS DOUBLE), 3) AS expected_candidates, n_hi AS n_above_07, CASE WHEN n_hi > 0 THEN round(CAST(exp_hi AS DOUBLE) / CAST(n_hi AS DOUBLE), 6) END AS recall_07, CASE WHEN CAST(exp_all AS DOUBLE) > 0.0 THEN round((CAST(exp_all AS DOUBLE) - CAST(exp_hi AS DOUBLE)) / CAST(exp_all AS DOUBLE), 6) END AS fp_share FROM ag ORDER BY bands DESC""",
-    // word-in-doc census, two pinned divisions, deterministic top-k
-    "q649_word_burstiness" ->
-      s"""$HASH_MACROS; WITH t0 AS (SELECT doc_id, unnest(docwords(text)) AS w FROM documents), t2 AS (SELECT doc_id, w FROM t0 WHERE w <> ''), pd AS (SELECT doc_id, w, COUNT(*) AS c FROM t2 GROUP BY 1, 2), cen AS (SELECT w, CAST(SUM(c) AS BIGINT) AS cf, CAST(COUNT(*) AS BIGINT) AS df, CAST(SUM(CASE WHEN c >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS df2 FROM pd GROUP BY 1 HAVING COUNT(*) >= 5) SELECT w AS word, cf, df, df2, round(CAST(cf AS DOUBLE) / CAST(df AS DOUBLE), 6) AS burst, round(CAST(df2 AS DOUBLE) / CAST(df AS DOUBLE), 6) AS adaptation FROM cen ORDER BY burst DESC, word LIMIT 200""",
-    "q85_tfidf" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w FROM documents), tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM w GROUP BY 1, 2), df AS (SELECT w, COUNT(DISTINCT doc_id) AS df FROM w GROUP BY 1), nd AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n FROM documents) SELECT doc_id, w, round(CAST(tf AS DOUBLE) * ln((SELECT n FROM nd) / CAST(df AS DOUBLE)), 6) AS tfidf FROM tf JOIN df USING (w) ORDER BY tfidf DESC, doc_id, w LIMIT 100""",
-    "q22_dedup_minhash" ->
-      s"""$HASH_MACROS; WITH hs AS ($DOC_HASHES), shingled AS (SELECT doc_id, list_transform(range(CASE WHEN n >= 3 THEN n - 2 ELSE 1 END), p -> shmix(shmix(h[p+1], coalesce(h[p+2], ${padLit(1)})), coalesce(h[p+3], ${padLit(2)}))) AS sh FROM hs), sigs AS (SELECT doc_id, $sigSql AS sig FROM shingled), bands AS (SELECT doc_id, unnest(list_zip([${(0 until 8).map(bandSql).mkString(", ")}], [0,1,2,3,4,5,6,7])) AS z FROM sigs), wb AS (SELECT doc_id, z[2] AS band_idx, z[1] AS band_hash FROM bands), stats AS (SELECT doc_id, MIN(doc_id) OVER w AS bucket_rep, COUNT(*) OVER w AS bucket_n FROM wb WINDOW w AS (PARTITION BY band_idx, band_hash)) SELECT doc_id, MIN(bucket_rep) AS rep_id, CAST(SUM(bucket_n - 1) AS BIGINT) AS n_candidates FROM stats GROUP BY doc_id ORDER BY doc_id""",
-    "q23_dedup_simhash" ->
-      s"""$HASH_MACROS; WITH hs AS ($DOC_HASHES), sims AS (SELECT doc_id, $simhashSqlExpr AS su FROM hs), bands AS (SELECT doc_id, su, unnest(list_zip([(su >> 0) & 65535, (su >> 16) & 65535, (su >> 32) & 65535, (su >> 48) & 65535], [0,1,2,3])) AS z FROM sims), wb AS (SELECT doc_id AS id, su, z[2] AS band_idx, z[1] AS band_val, ROW_NUMBER() OVER (PARTITION BY z[2], z[1] ORDER BY doc_id) AS rn FROM bands), pairs AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b FROM wb a JOIN wb b ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.id < b.id WHERE a.rn <= 64 AND b.rn <= 64 AND bit_count(tosigned(xor(a.su, b.su))) <= 12), nc AS (SELECT doc_id, COUNT(*) AS n_near FROM (SELECT id_a AS doc_id FROM pairs UNION ALL SELECT id_b AS doc_id FROM pairs) GROUP BY doc_id) SELECT s.doc_id, tosigned(s.su) AS simhash, COALESCE(nc.n_near, 0) AS n_near FROM sims s LEFT JOIN nc ON s.doc_id = nc.doc_id ORDER BY s.doc_id""",
-    "q24_ngram_jaccard" ->
-      s"""$HASH_MACROS; WITH hs AS ($DOC_HASHES), sh2 AS (SELECT doc_id, list_transform(range(CASE WHEN n >= 2 THEN n - 1 ELSE 1 END), p -> shmix(h[p+1], coalesce(h[p+2], ${padLit(1)}))) AS sh FROM hs), grams AS (SELECT doc_id AS id, list_sort(list_distinct(list_transform(sh, s -> tosigned(s)))) AS g FROM sh2), bk AS (SELECT id, g, g[1] AS m1, g[CASE WHEN len(g) >= 2 THEN 2 ELSE 1 END] AS m2, ROW_NUMBER() OVER (PARTITION BY g[1], g[CASE WHEN len(g) >= 2 THEN 2 ELSE 1 END] ORDER BY id) AS rn FROM grams) SELECT a.id AS id_a, b.id AS id_b, CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) AS jaccard FROM bk a JOIN bk b ON a.m1 = b.m1 AND a.m2 = b.m2 AND a.id < b.id WHERE a.rn <= 64 AND b.rn <= 64 ORDER BY jaccard DESC, id_a, id_b LIMIT 200""",
-    "q25_dedup_embed" ->
-      s"""$VEC_MACROS; WITH sigs AS (SELECT vec_id, embedding, ${sigExpr(0)} AS b0, ${sigExpr(8)} AS b1 FROM embeddings), p AS (SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b FROM sigs a JOIN sigs b ON (a.b0 = b.b0 OR a.b1 = b.b1) AND a.vec_id < b.vec_id) SELECT p.id_a, p.id_b, round(pcos(ea.embedding, eb.embedding), 4) AS cos_r FROM p JOIN embeddings ea ON ea.vec_id = p.id_a JOIN embeddings eb ON eb.vec_id = p.id_b ORDER BY cos_r DESC NULLS LAST, id_a, id_b LIMIT 100""",
-    "q27_ann_lsh" ->
-      s"""$VEC_MACROS; WITH sigs AS (SELECT vec_id, embedding, ${sigExpr(0)} AS b0, ${sigExpr(8)} AS b1 FROM embeddings), cand AS (SELECT DISTINCT q.vec_id AS qid, e.vec_id AS nid, round(pcos(q.embedding, e.embedding), 4) AS cos_r FROM sigs q JOIN sigs e ON (q.b0 = e.b0 OR q.b1 = e.b1) AND q.vec_id <> e.vec_id WHERE q.vec_id < 10), r AS (SELECT qid, nid, cos_r, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos_r DESC NULLS LAST, nid) AS rnk FROM cand) SELECT qid, rnk, nid, cos_r FROM r WHERE rnk <= 5 ORDER BY qid, rnk""",
-    "q57_range_join" ->
-      """WITH bands(band_id, lo, hi) AS (VALUES (1, 0, 30000), (2, 20000, 80000), (3, 75000, 200000), (4, 150000, 400000), (5, 380000, 600000)) SELECT band_id, lo, hi, COUNT(*) AS n_orders, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total FROM orders JOIN bands ON o_totalprice >= lo AND o_totalprice < hi GROUP BY band_id, lo, hi ORDER BY band_id""",
-    "q58_set_ops" ->
-      """SELECT o_custkey, 'both' AS segment FROM (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F' INTERSECT SELECT o_custkey FROM orders WHERE o_orderstatus = 'O') UNION ALL SELECT o_custkey, 'f_only' AS segment FROM (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F' EXCEPT SELECT o_custkey FROM orders WHERE o_orderstatus = 'O') UNION ALL SELECT o_custkey, 'o_only' AS segment FROM (SELECT o_custkey FROM orders WHERE o_orderstatus = 'O' EXCEPT SELECT o_custkey FROM orders WHERE o_orderstatus = 'F') ORDER BY segment, o_custkey""",
-    "q59_word_clusters" -> wordClustersOracleSql,
-    // incremental maintenance must equal the from-scratch recompute — the
-    // oracle IS q59's full recursive-CTE components, verbatim
-    "q216_inc_components" -> wordClustersOracleSql,
-    // ... and so must the STREAMING batch-split maintenance (union-find
-    // merging commutes across micro-batch boundaries)
-    "q219_stream_components" -> wordClustersOracleSql,
-    "q220_tokenize" -> tokenizeOracleSql,
-    "q70_array_agg" ->
-      """SELECT user_id, COUNT(*) AS n_events, array_to_string((list(event_type ORDER BY CAST(epoch_ns(ts) // 1000000000 AS BIGINT), event_id))[1:5], '>') AS first5 FROM events GROUP BY user_id ORDER BY user_id""",
-    "q71_event_paths" ->
-      """WITH e AS (SELECT user_id, event_type, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec, event_id FROM events), l AS (SELECT event_type, lead(event_type, 1) OVER w AS t2, lead(event_type, 2) OVER w AS t3 FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)) SELECT concat_ws('>', event_type, t2, t3) AS path, COUNT(*) AS n FROM l WHERE t2 IS NOT NULL AND t3 IS NOT NULL GROUP BY 1 ORDER BY n DESC, path LIMIT 20""",
-    "q72_cohort" ->
-      """WITH f AS (SELECT user_id, MIN(CAST(epoch_ns(ts) // 1000000000 AS BIGINT)) AS s0 FROM events WHERE event_type = 'signup' GROUP BY user_id), e AS (SELECT ev.user_id, CAST(epoch_ns(ev.ts) // 1000000000 AS BIGINT) AS sec, f.s0 FROM events ev JOIN f ON ev.user_id = f.user_id) SELECT strftime(epoch_ms(s0 * 1000), '%Y-%m-%d') AS cohort_day, (sec - s0) // 604800 AS week_offset, COUNT(DISTINCT user_id) AS n_users FROM e WHERE sec >= s0 GROUP BY 1, 2 ORDER BY cohort_day, week_offset""",
-    "q73_orc_roundtrip" ->
-      s"""SELECT event_type, COUNT(*) AS n, $SUMV AS total_value FROM events GROUP BY event_type ORDER BY event_type""",
-    "q74_dynamic_pruning" ->
-      s"""WITH d AS (SELECT DISTINCT strftime(ts, '%Y-%m-%d') AS date_id FROM events ORDER BY date_id DESC LIMIT 3), r AS (SELECT date_id, CAST(ROW_NUMBER() OVER (ORDER BY date_id DESC) AS INTEGER) AS day_rank FROM d) SELECT e.date_id, r.day_rank, COUNT(*) AS n, $SUMV AS total_value FROM (SELECT strftime(ts, '%Y-%m-%d') AS date_id, value FROM events) e JOIN r ON e.date_id = r.date_id GROUP BY e.date_id, r.day_rank ORDER BY e.date_id""",
-    "q64_scd2_islands" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), c AS (SELECT user_id, event_id, event_type, sec, CASE WHEN lag(event_type) OVER w IS NULL OR lag(event_type) OVER w <> event_type THEN 1 ELSE 0 END AS chg FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)), g AS (SELECT user_id, event_type, sec, CAST(SUM(chg) OVER (PARTITION BY user_id ORDER BY sec, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS version FROM c), a AS (SELECT user_id, version, MIN(event_type) AS event_type, MIN(sec) AS valid_from, MAX(sec) AS valid_to, COUNT(*) AS n_events FROM g GROUP BY user_id, version) SELECT user_id, version, event_type, valid_from, valid_to, n_events, CAST(version = MAX(version) OVER (PARTITION BY user_id) AS INTEGER) AS is_current FROM a ORDER BY user_id, version""",
-    "q65_resample_ffill" ->
-      s"""WITH hourly AS (SELECT user_id, (CAST(epoch_ns(ts) // 1000000000 AS BIGINT) // 3600) * 3600 AS hsec, COUNT(*) AS n, $SUMV AS hv FROM events GROUP BY 1, 2), spine AS (SELECT user_id, unnest(generate_series(mn, mx, 3600)) AS hsec FROM (SELECT user_id, MIN(hsec) AS mn, MAX(hsec) AS mx FROM hourly GROUP BY user_id)), j AS (SELECT s.user_id, s.hsec, h.n, h.hv FROM spine s LEFT JOIN hourly h ON s.user_id = h.user_id AND s.hsec = h.hsec) SELECT user_id, hsec, COALESCE(n, 0) AS n, last_value(hv IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY hsec ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS total_ffill FROM j ORDER BY user_id, hsec""",
-    "q66_unpivot" ->
-      """WITH w AS (SELECT user_id, CAST(SUM(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click, CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_view, CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase, CAST(SUM(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup, CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error FROM events GROUP BY user_id) SELECT user_id, 'click' AS event_type, n_click AS n FROM w UNION ALL SELECT user_id, 'view', n_view FROM w UNION ALL SELECT user_id, 'purchase', n_purchase FROM w UNION ALL SELECT user_id, 'signup', n_signup FROM w UNION ALL SELECT user_id, 'error', n_error FROM w ORDER BY user_id, event_type""",
-    "q67_histogram" ->
-      """WITH b AS (SELECT CAST(floor(o_totalprice / 30000.0) AS BIGINT) AS bin, COUNT(*) AS n, MIN(o_totalprice) AS lo_seen, MAX(o_totalprice) AS hi_seen FROM orders GROUP BY 1) SELECT bin, n, lo_seen, hi_seen, CAST(n AS DOUBLE) / CAST(SUM(n) OVER () AS DOUBLE) AS frac FROM b ORDER BY bin""",
-    "q68_cdc_compact" ->
-      """SELECT user_id, event_type, event_id AS last_event, value AS last_value, sec AS last_sec FROM (SELECT user_id, event_type, event_id, value, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec, ROW_NUMBER() OVER (PARTITION BY user_id, event_type ORDER BY CAST(epoch_ns(ts) // 1000000000 AS BIGINT) DESC, event_id DESC) AS rn FROM events) WHERE rn = 1 ORDER BY user_id, event_type""",
-    "q60_regex_extract" ->
-      """SELECT doc_id, regexp_extract(text, '([0-9]+)', 1) AS first_num, CAST(len(regexp_extract_all(text, '[0-9]+')) AS BIGINT) AS n_nums, CAST(len(regexp_extract_all(text, '[A-Z][a-z]+')) AS BIGINT) AS n_capitalized FROM documents ORDER BY doc_id""",
-    // weekday: Spark 0=Monday == DuckDB isodow-1; week: ISO both sides
-    "q61_date_functions" ->
-      """SELECT o_orderkey, CAST(year(o_orderdate) AS BIGINT) AS y, CAST(quarter(o_orderdate) AS BIGINT) AS q, CAST(month(o_orderdate) AS BIGINT) AS m, CAST(day(o_orderdate) AS BIGINT) AS d, CAST(week(o_orderdate) AS BIGINT) AS iso_week, CAST(isodow(o_orderdate) - 1 AS BIGINT) AS wd, strftime(last_day(o_orderdate), '%Y-%m-%d') AS month_end, CAST(date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS days_since_92, strftime(o_orderdate + INTERVAL 3 MONTH, '%Y-%m-%d') AS plus_quarter FROM orders ORDER BY o_orderkey""",
-    "q62_string_functions" ->
-      """SELECT c_custkey, upper(c_mktsegment) AS seg_u, substr(c_name, 1, 8) AS name_head, split_part(c_name, '#', 2) AS name_num, lpad(CAST(c_custkey AS VARCHAR), 10, '0') AS key_pad, translate(c_name, '#0', '-_') AS name_translated, reverse(c_mktsegment) AS seg_rev, concat_ws('|', c_mktsegment, c_name) AS tagged, CAST(length(c_name) AS BIGINT) AS name_len FROM customer ORDER BY c_custkey""",
-    "q63_argmax" ->
-      """WITH r AS (SELECT user_id, event_type, value, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY value DESC, event_id DESC) AS rmax, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY value ASC, event_id ASC) AS rmin FROM events), a AS (SELECT user_id, COUNT(*) AS n, MAX(value) AS max_value FROM events GROUP BY user_id) SELECT a.user_id, a.n, mx.event_type AS top_type, mn.event_type AS bottom_type, a.max_value FROM a JOIN r mx ON a.user_id = mx.user_id AND mx.rmax = 1 JOIN r mn ON a.user_id = mn.user_id AND mn.rmin = 1 ORDER BY a.user_id""",
-    "q53_stream_hourly" ->
-      s"""SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type, COUNT(*) AS n, $SUMV AS total_value FROM events GROUP BY 1, 2 ORDER BY hour, event_type""",
-    // session_window merge is INCLUSIVE at the gap boundary (an interval
-    // touching the previous session's end extends it — verified empirically
-    // at sf0.1, where one exactly-1800s gap exists), so the oracle uses the
-    // same > gap test as batch q15
-    "q54_stream_sessions" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), s AS (SELECT user_id, event_id, sec, CASE WHEN lag(sec) OVER w IS NULL OR sec - lag(sec) OVER w > 1800 THEN 1 ELSE 0 END AS new_s FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)), t AS (SELECT user_id, sec, CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY sec, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id FROM s) SELECT user_id, MIN(sec) AS start_sec, MAX(sec) AS end_sec, COUNT(*) AS n_events FROM t GROUP BY user_id, session_id ORDER BY user_id, start_sec""",
-    "q55_stream_dedup" ->
-      """SELECT DISTINCT user_id, event_type FROM events ORDER BY user_id, event_type""",
-    "q56_stream_lake" ->
-      s"""SELECT strftime(ts, '%Y-%m-%d') AS date_id, COUNT(*) AS n, $SUMV AS total_value FROM events GROUP BY 1 ORDER BY date_id""",
-    "q69_stream_static_join" ->
-      s"""SELECT c_mktsegment, COUNT(*) AS n, $SUMV AS total_value FROM events JOIN customer ON user_id = c_custkey GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "q77_stream_stream_join" ->
-      """WITH p AS (SELECT event_id AS p_id, user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events WHERE event_type = 'purchase'), c AS (SELECT event_id AS c_id, user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events WHERE event_type = 'click') SELECT p.p_id, c.c_id FROM p JOIN c ON p.user_id = c.user_id AND c.sec >= p.sec - 3600 AND c.sec <= p.sec ORDER BY p_id, c_id""",
-    "q171_stream_full_outer" ->
-      """WITH p AS (SELECT event_id AS p_id, user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events WHERE event_type = 'purchase'), c AS (SELECT event_id AS c_id, user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events WHERE event_type = 'click') SELECT p.p_id, c.c_id FROM p FULL JOIN c ON p.user_id = c.user_id AND c.sec >= p.sec - 3600 AND c.sec <= p.sec ORDER BY p_id, c_id""",
-    "q92_stream_outer_join" ->
-      """WITH p AS (SELECT event_id AS p_id, user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events WHERE event_type = 'purchase'), c AS (SELECT event_id AS c_id, user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events WHERE event_type = 'click') SELECT p.p_id, c.c_id FROM p LEFT JOIN c ON p.user_id = c.user_id AND c.sec >= p.sec - 3600 AND c.sec <= p.sec ORDER BY p_id, c_id""",
-    "q79_typed_dataset" ->
-      """SELECT o_orderkey, c_name, c_mktsegment, o_totalprice FROM orders JOIN customer ON o_custkey = c_custkey WHERE o_orderstatus = 'F' ORDER BY o_orderkey""",
-    "q81_zorder_layout" ->
-      s"""SELECT o_orderkey, o_custkey, day_nr, ${zorderSql("o_custkey", "day_nr")} AS zval FROM (SELECT o_orderkey, o_custkey, CAST(date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS day_nr FROM orders) ORDER BY o_orderkey""",
-    "q94_zorder3" ->
-      s"""SELECT o_orderkey, o_custkey, day_nr, price_k, ${zorderSqlN(16, Seq("o_custkey", "day_nr", "price_k"))} AS zval FROM (SELECT o_orderkey, o_custkey, CAST(date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS day_nr, CAST(floor(o_totalprice / 1000) AS BIGINT) AS price_k FROM orders) ORDER BY o_orderkey""",
-    // five inclusion-dependency probes over distinct key domains
-    "q368_fk_discovery" ->
-      s"""SELECT * FROM (${Seq(
-        ("lineitem.l_orderkey->orders.o_orderkey", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-        ("lineitem.l_partkey->part.p_partkey", "lineitem", "l_partkey", "part", "p_partkey"),
-        ("orders.o_custkey->customer.c_custkey", "orders", "o_custkey", "customer", "c_custkey"),
-        ("customer.c_nationkey->nation.n_nationkey", "customer", "c_nationkey", "nation", "n_nationkey"),
-        ("orders.o_orderkey->customer.c_custkey", "orders", "o_orderkey", "customer", "c_custkey"))
-        .map(p => fkPairSql(p._1, p._2, p._3, p._4, p._5))
-        .mkString(" UNION ALL ")}) ORDER BY candidate""",
-    // the hash policy replays verbatim; exact-cents reward means
-    "q369_policy_replay" ->
-      """WITH e AS (SELECT user_id, event_type, CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents, ['view','click','purchase','signup','error'][CAST(CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 13)) AS BIGINT) % 5 AS INTEGER) + 1] AS pol FROM events), s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total, CAST(SUM(CASE WHEN event_type = pol THEN 1 ELSE 0 END) AS BIGINT) AS n_matched, SUM(CASE WHEN event_type = pol THEN CAST(cents AS DECIMAL(38,0)) ELSE 0 END) AS sr, SUM(CAST(cents AS DECIMAL(38,0))) AS srall FROM e) SELECT n_total, n_matched, round(CAST(n_matched AS DOUBLE) / CAST(n_total AS DOUBLE), 6) AS match_rate, round(CAST(sr AS DOUBLE) / CAST(n_matched AS DOUBLE), 6) AS replay_reward, round(CAST(srall AS DOUBLE) / CAST(n_total AS DOUBLE), 6) AS baseline_reward FROM s""",
-    // running-max window replay with the identical pinned tie-break order
-    "q370_max_drawdown" ->
-      """WITH s AS (SELECT l_suppkey, l_shipdate AS t, l_orderkey AS ok, CAST(l_linenumber AS BIGINT) AS ln, CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM lineitem), w AS (SELECT l_suppkey, cents, MAX(cents) OVER (PARTITION BY l_suppkey ORDER BY t, ok, ln, cents ROWS UNBOUNDED PRECEDING) - cents AS dd FROM s) SELECT l_suppkey, CAST(COUNT(*) AS BIGINT) AS n, MAX(dd) AS max_drawdown, MAX(cents) AS peak, MIN(cents) AS trough FROM w GROUP BY l_suppkey ORDER BY l_suppkey""",
-    // per-action empirical propensities; IPS/SNIPS terms on the 1e-6 grid
-    "q371_ips_eval" ->
-      """WITH e AS (SELECT user_id, event_type, CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents, ['view','click','purchase','signup','error'][CAST(CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 13)) AS BIGINT) % 5 AS INTEGER) + 1] AS pol FROM events), a AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_a, CAST(SUM(CASE WHEN event_type = pol THEN 1 ELSE 0 END) AS BIGINT) AS m_a, SUM(CASE WHEN event_type = pol THEN CAST(cents AS DECIMAL(38,0)) ELSE 0 END) AS s_a, SUM(CAST(cents AS DECIMAL(38,0))) AS sr_a FROM e GROUP BY event_type), f AS (SELECT CAST(SUM(n_a) AS BIGINT) AS n_total, CAST(SUM(m_a) AS BIGINT) AS n_matched, SUM(CAST(round(CAST(s_a AS DOUBLE) / CAST(n_a AS DOUBLE), 6) AS DECIMAL(38,6))) AS ips_sum, SUM(CAST(round(CAST(m_a AS DOUBLE) / CAST(n_a AS DOUBLE), 6) AS DECIMAL(38,6))) AS w_sum, SUM(sr_a) AS sr_all FROM a) SELECT n_total, n_matched, round(CAST(ips_sum AS DOUBLE), 6) AS ips_reward, round(CAST(ips_sum AS DOUBLE) / CAST(w_sum AS DOUBLE), 6) AS snips_reward, round(CAST(sr_all AS DOUBLE) / CAST(n_total AS DOUBLE), 6) AS baseline_reward FROM f""",
-    // per-connector pair join on the distinct incidence list, capped degree
-    "q372_adamic_adar" ->
-      """WITH nv AS (SELECT DISTINCT CAST(l_partkey AS BIGINT) AS n, CAST(l_orderkey AS BIGINT) AS v FROM lineitem), deg AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS d FROM nv GROUP BY v HAVING COUNT(*) BETWEEN 2 AND 8), w AS (SELECT v, CAST(round(1.0 / ln(CAST(d AS DOUBLE)), 9) AS DECIMAL(18,9)) AS w FROM deg), inc AS (SELECT nv.n, nv.v, w.w FROM nv JOIN w ON nv.v = w.v) SELECT a.n AS n1, b.n AS n2, CAST(COUNT(*) AS BIGINT) AS n_shared, CAST(SUM(a.w) AS DOUBLE) AS aa_score FROM inc a JOIN inc b ON a.v = b.v AND a.n < b.n GROUP BY a.n, b.n HAVING COUNT(*) >= 2 ORDER BY n1, n2""",
-    // the Kalman recursion replayed step-for-step, same IEEE op order
-    "q374_kalman_level" ->
-      """WITH RECURSIVE h AS (SELECT user_id, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS DOUBLE) AS v FROM events GROUP BY 1, 2), o AS (SELECT user_id, v, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY hid) AS rn FROM h), nn AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n FROM o GROUP BY 1), rec AS (SELECT user_id, CAST(1 AS BIGINT) AS rn, v AS x, CAST(1.0 AS DOUBLE) AS p FROM o WHERE rn = 1 UNION ALL SELECT r.user_id, r.rn + 1, r.x + ((r.p + 0.25) / ((r.p + 0.25) + 1.0)) * (e.v - r.x) AS x, (1.0 - (r.p + 0.25) / ((r.p + 0.25) + 1.0)) * (r.p + 0.25) AS p FROM rec r JOIN o e ON e.user_id = r.user_id AND e.rn = r.rn + 1) SELECT f.user_id, nn.n, round(f.x, 6) AS level, round(f.p, 6) AS p_var FROM rec f JOIN nn ON nn.user_id = f.user_id AND f.rn = nn.n ORDER BY f.user_id""",
-    // centered 2x24 MA + equal-slot seasonal means on the decimal grid
-    "q375_ma_decompose" ->
-      """WITH h AS (SELECT epoch_ns(ts) // 1000000000 // 3600 AS t, CAST(COUNT(*) AS BIGINT) AS x FROM events GROUP BY 1), w AS (SELECT t, x, SUM(x) OVER (ORDER BY t ROWS BETWEEN 12 PRECEDING AND 11 FOLLOWING) + SUM(x) OVER (ORDER BY t ROWS BETWEEN 11 PRECEDING AND 12 FOLLOWING) AS s, COUNT(*) OVER (ORDER BY t ROWS BETWEEN 12 PRECEDING AND 11 FOLLOWING) + COUNT(*) OVER (ORDER BY t ROWS BETWEEN 11 PRECEDING AND 12 FOLLOWING) AS c FROM h), de AS (SELECT t, x, CASE WHEN c = 48 THEN CAST(round(CAST(s AS DOUBLE) / 48.0, 6) AS DECIMAL(18,6)) END AS trend, t % 24 AS slot FROM w), dd AS (SELECT t, x, trend, slot, CAST(x AS DECIMAL(18,6)) - trend AS d FROM de), sm AS (SELECT slot, CAST(round(CAST(SUM(d) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS DECIMAL(18,6)) AS seas0 FROM dd WHERE trend IS NOT NULL GROUP BY slot), ct AS (SELECT CAST(round(CAST(SUM(seas0) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS DECIMAL(18,6)) AS ctr FROM sm) SELECT dd.t, dd.x, CAST(dd.trend AS DOUBLE) AS trend, CAST(sm.seas0 - ct.ctr AS DOUBLE) AS seasonal, CAST(CAST(dd.x AS DECIMAL(18,6)) - dd.trend - (sm.seas0 - ct.ctr) AS DOUBLE) AS remainder FROM dd LEFT JOIN sm ON dd.slot = sm.slot CROSS JOIN ct ORDER BY dd.t""",
-    // sweep-rule overlap/gap census against the running max of prior ends
-    "q376_validity_audit" ->
-      """WITH iv AS (SELECT o_custkey, CAST(o_orderkey AS BIGINT) AS ok, CAST(date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS f FROM orders), i2 AS (SELECT o_custkey, ok, f, f + 1 + ok % 40 AS tt FROM iv), p AS (SELECT o_custkey, f, tt, MAX(tt) OVER (PARTITION BY o_custkey ORDER BY f, tt, ok ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pe FROM i2) SELECT o_custkey, CAST(COUNT(*) AS BIGINT) AS n_rows, CAST(SUM(CASE WHEN f < pe THEN 1 ELSE 0 END) AS BIGINT) AS n_overlaps, CAST(SUM(CASE WHEN f > pe THEN 1 ELSE 0 END) AS BIGINT) AS n_gaps, CAST(SUM(CASE WHEN tt <= f THEN 1 ELSE 0 END) AS BIGINT) AS n_empty, (SUM(CASE WHEN f < pe THEN 1 ELSE 0 END) + SUM(CASE WHEN f > pe THEN 1 ELSE 0 END) + SUM(CASE WHEN tt <= f THEN 1 ELSE 0 END)) = 0 AS clean FROM p GROUP BY o_custkey ORDER BY o_custkey""",
-    // the ring replays as parallel sorted lists + a filter-count probe
-    "q378_consistent_hash" ->
-      s"""WITH vn AS (SELECT s, i, CAST(concat('0x', substr(md5(concat(s, ':', CAST(i AS VARCHAR))), 1, 13)) AS BIGINT) AS ring FROM (SELECT unnest([${(0 until 8).map(i => s"'shard-$i'").mkString(",")}]) AS s), (SELECT unnest(range(0, 40)) AS i)), a AS (SELECT list(ring ORDER BY ring, s) AS rings, list(s ORDER BY ring, s) AS ss FROM vn), k AS (SELECT c_custkey, CAST(concat('0x', substr(md5(CAST(c_custkey AS VARCHAR)), 1, 13)) AS BIGINT) AS hk FROM customer), r AS (SELECT c_custkey, CASE WHEN len(list_filter(rings, x -> x < hk)) = len(rings) THEN ss[1] ELSE ss[len(list_filter(rings, x -> x < hk)) + 1] END AS shard FROM k, a) SELECT shard, CAST(COUNT(*) AS BIGINT) AS n_keys, round(CAST(COUNT(*) AS DOUBLE) / CAST(SUM(COUNT(*)) OVER () AS DOUBLE), 6) AS pct FROM r GROUP BY shard ORDER BY shard""",
-    // register-for-register HLL replay; 2^-M terms on the 1e-18 grid
-    "q379_hll_registers" -> hllOracleSql,
-    // the streaming register store must equal the whole-corpus sketch:
-    // MAX-merge makes batch boundaries invisible, so the SAME oracle
-    "q381_stream_hll" -> hllOracleSql,
-    // argmax-of-hashes per key; rank replay with the (h desc, s desc) tie
-    "q382_rendezvous_hash" ->
-      s"""WITH sh AS (SELECT unnest([${(0 until 8).map(i => s"'shard-$i'").mkString(",")}]) AS s), h AS (SELECT c_custkey, s, CAST(concat('0x', substr(md5(concat(CAST(c_custkey AS VARCHAR), '|', s)), 1, 13)) AS BIGINT) AS hv FROM customer, sh), r AS (SELECT c_custkey, s, ROW_NUMBER() OVER (PARTITION BY c_custkey ORDER BY hv DESC, s DESC) AS rn FROM h) SELECT s AS shard, CAST(COUNT(*) AS BIGINT) AS n_keys, round(CAST(COUNT(*) AS DOUBLE) / CAST(SUM(COUNT(*)) OVER () AS DOUBLE), 6) AS pct FROM r WHERE rn = 1 GROUP BY s ORDER BY s""",
-    // top-(k+1) order statistics; log-ratio terms on the 1e-9 grid
-    "q383_hill_tail" ->
-      """WITH v AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM orders WHERE o_totalprice > 0), top AS (SELECT cents AS v FROM v ORDER BY v DESC LIMIT 101), thr AS (SELECT MIN(v) AS xmin FROM top), r AS (SELECT v, ROW_NUMBER() OVER (ORDER BY v DESC) AS rn FROM top) SELECT CAST(COUNT(*) AS BIGINT) AS k, MIN(thr.xmin) AS xmin, round(CAST(COUNT(*) AS DOUBLE) / CAST(SUM(CAST(round(ln(CAST(v AS DOUBLE) / CAST(thr.xmin AS DOUBLE)), 9) AS DECIMAL(18,9))) AS DOUBLE), 6) AS alpha FROM r, thr WHERE rn <= 100""",
-    // pooled theta from exact moments; adjusted means + variance ratio
-    "q395_cuped" -> cupedSql,
-    // 8 unrolled materialized power-iteration rounds, gridded scores
-    "q407_hits" -> hitsSql(8),
-    // q399's two-window report on the epoch-second axis the stream uses
-    "q410_stream_sliding_hll" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS t FROM events), mm AS (SELECT MIN(t) AS tmin, (MIN(t) + MAX(t)) // 2 AS mid FROM e), h AS (SELECT user_id, t, CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 13)) AS BIGINT) AS hh FROM e), cells AS (SELECT hh % 256 AS j, CASE WHEN hh // 256 = 0 THEN 45 ELSE 45 - length(bin(hh // 256)) END AS rho, MAX(t) AS max_ts FROM h GROUP BY 1, 2), wc AS (SELECT 'w_all' AS g, j, rho FROM cells, mm WHERE max_ts >= mm.tmin UNION ALL SELECT 'w_recent', j, rho FROM cells, mm WHERE max_ts >= mm.mid + 1), regs AS (SELECT g, j, MAX(rho) AS m FROM wc GROUP BY 1, 2), agg AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n_regs, SUM(CAST(round(pow(2.0, -m), 18) AS DECIMAL(38,18))) AS sp FROM regs GROUP BY g), e2 AS (SELECT g, n_regs, 256 - n_regs AS v_empty, 0.7213 / (1.0 + 1.079 / 256.0) * 65536.0 / CAST(sp + CAST(256 - n_regs AS DECIMAL(38,18)) AS DOUBLE) AS eraw FROM agg), ex AS (SELECT 'w_all' AS g, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact FROM e, mm WHERE t >= mm.tmin UNION ALL SELECT 'w_recent', CAST(COUNT(DISTINCT user_id) AS BIGINT) FROM e, mm WHERE t >= mm.mid + 1) SELECT e2.g, e2.n_regs, CAST(e2.v_empty AS BIGINT) AS v_empty, round(CASE WHEN eraw <= 640.0 AND v_empty > 0 THEN 256.0 * ln(256.0 / CAST(v_empty AS DOUBLE)) ELSE eraw END, 6) AS estimate, ex.n_exact, round((CASE WHEN eraw <= 640.0 AND v_empty > 0 THEN 256.0 * ln(256.0 / CAST(v_empty AS DOUBLE)) ELSE eraw END - CAST(n_exact AS DOUBLE)) / CAST(n_exact AS DOUBLE), 6) AS rel_error FROM e2 JOIN ex ON e2.g = ex.g ORDER BY e2.g""",
-    // grid terms times scale-0 counts; O(1) outputs only
-    "q411_theil_index" ->
-      """WITH e AS (SELECT CAST(o_orderpriority AS VARCHAR) AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM orders), bv AS (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS t FROM e GROUP BY 1, 2), wt AS (SELECT g, v, t, CAST(SUM(t) OVER (PARTITION BY g) AS BIGINT) AS ng, SUM(CAST(v AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0))) OVER (PARTITION BY g) AS xg, CAST(SUM(t) OVER () AS BIGINT) AS n, SUM(CAST(v AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0))) OVER () AS x FROM bv), pg AS (SELECT g, ng, xg, n, x, SUM(CAST(round((CAST(v AS DOUBLE) * CAST(ng AS DOUBLE) / CAST(xg AS DOUBLE)) * ln(CAST(v AS DOUBLE) * CAST(ng AS DOUBLE) / CAST(xg AS DOUBLE)), 9) AS DECIMAL(18,9)) * CAST(t AS DECIMAL(20,0))) AS tg_sum, SUM(CAST(round((CAST(v AS DOUBLE) * CAST(n AS DOUBLE) / CAST(x AS DOUBLE)) * ln(CAST(v AS DOUBLE) * CAST(n AS DOUBLE) / CAST(x AS DOUBLE)), 9) AS DECIMAL(18,9)) * CAST(t AS DECIMAL(20,0))) AS tu_sum FROM wt GROUP BY 1, 2, 3, 4, 5), fin AS (SELECT g, ng, xg, n, x, tg_sum, tu_sum, CAST(round((CAST(xg AS DOUBLE) / CAST(x AS DOUBLE)) * (CAST(tg_sum AS DOUBLE) / CAST(ng AS DOUBLE)), 9) AS DECIMAL(18,9)) AS within_term, CAST(round((CAST(xg AS DOUBLE) / CAST(x AS DOUBLE)) * ln(CAST(xg AS DOUBLE) * CAST(n AS DOUBLE) / (CAST(x AS DOUBLE) * CAST(ng AS DOUBLE))), 9) AS DECIMAL(18,9)) AS between_term FROM pg) SELECT g, ng AS n_g, round(CAST(xg AS DOUBLE) / CAST(x AS DOUBLE), 6) AS income_share, round(CAST(tg_sum AS DOUBLE) / CAST(ng AS DOUBLE), 6) AS theil_g, round(CAST(SUM(within_term) OVER () AS DOUBLE), 6) AS theil_within, round(CAST(SUM(between_term) OVER () AS DOUBLE), 6) AS theil_between, round(CAST(SUM(tu_sum) OVER () AS DOUBLE) / CAST(n AS DOUBLE), 6) AS theil_total FROM fin ORDER BY g""",
-    // the LLR walk with integer counts; first crossing by min rank
-    "q412_sprt" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS tsec, event_id, event_type = 'purchase' AS conv FROM events), o AS (SELECT user_id, CASE WHEN conv THEN 1 ELSE 0 END AS c, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY tsec, event_id) AS rn FROM e), wk AS (SELECT user_id, rn, CAST(SUM(c) OVER (PARTITION BY user_id ORDER BY rn ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n1 FROM o), ll AS (SELECT user_id, rn, CAST(n1 AS DOUBLE) * ln(0.25 / 0.15) + CAST(rn - n1 AS DOUBLE) * ln((1.0 - 0.25) / (1.0 - 0.15)) AS llr FROM wk), dd AS (SELECT user_id, rn, llr, CASE WHEN llr >= ln(19.0) THEN 'h1' WHEN llr <= -ln(19.0) THEN 'h0' END AS dcn FROM ll), fin AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_total, round(max_by(llr, rn), 6) AS llr_final, CAST(MIN(CASE WHEN dcn IS NOT NULL THEN rn END) AS BIGINT) AS n_at_decision FROM dd GROUP BY 1) SELECT f.user_id, f.n_total, COALESCE(d.dcn, 'continue') AS decision, f.n_at_decision, round(d.llr, 6) AS llr_at_decision, f.llr_final FROM fin f LEFT JOIN dd d ON d.user_id = f.user_id AND d.rn = f.n_at_decision ORDER BY f.user_id""",
-    // per-group S^2/n terms on the grid; SSB/SSW/F in pinned doubles
-    "q408_anova_f" ->
-      """WITH e AS (SELECT CAST(o_orderpriority AS VARCHAR) AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM orders), pg AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n_g, SUM(CAST(v AS DECIMAL(38,0))) AS s_g, SUM(CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))) AS ss_g FROM e GROUP BY g), pt AS (SELECT *, CAST(round(CAST(s_g AS DOUBLE) * CAST(s_g AS DOUBLE) / CAST(n_g AS DOUBLE), 6) AS DECIMAL(38,6)) AS term FROM pg), t AS (SELECT CAST(SUM(n_g) AS DOUBLE) AS n, CAST(COUNT(*) AS DOUBLE) AS k, CAST(SUM(s_g) AS DOUBLE) AS s, CAST(SUM(ss_g) AS DOUBLE) AS ss, CAST(SUM(term) AS DOUBLE) AS tsum FROM pt) SELECT g, n_g, round(CAST(s_g AS DOUBLE) / CAST(n_g AS DOUBLE), 6) AS mean_g, round(((t.tsum - t.s * t.s / t.n) / (t.k - 1.0)) / (((t.ss - t.s * t.s / t.n) - (t.tsum - t.s * t.s / t.n)) / (t.n - t.k)), 6) AS f_stat FROM pt, t ORDER BY g""",
-    // discordant cells only; continuity-corrected variant beside
-    "q409_mcnemar" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) AS t, event_type FROM events), mm AS (SELECT (MIN(t) + MAX(t)) // 2 AS mid FROM e), per AS (SELECT user_id, event_type, SUM(CASE WHEN t <= mm.mid THEN 1 ELSE 0 END) >= 10 AS pre, SUM(CASE WHEN t > mm.mid THEN 1 ELSE 0 END) >= 10 AS post FROM e, mm GROUP BY 1, 2), ag AS (SELECT CAST(SUM(CASE WHEN pre AND post THEN 1 ELSE 0 END) AS BIGINT) AS n11, CAST(SUM(CASE WHEN pre AND NOT post THEN 1 ELSE 0 END) AS BIGINT) AS b, CAST(SUM(CASE WHEN NOT pre AND post THEN 1 ELSE 0 END) AS BIGINT) AS c, CAST(SUM(CASE WHEN NOT pre AND NOT post THEN 1 ELSE 0 END) AS BIGINT) AS n00 FROM per) SELECT n11, b, c, n00, round(CAST(b - c AS DOUBLE) * CAST(b - c AS DOUBLE) / CAST(b + c AS DOUBLE), 6) AS chi2, round((abs(CAST(b - c AS DOUBLE)) - 1.0) * (abs(CAST(b - c AS DOUBLE)) - 1.0) / CAST(b + c AS DOUBLE), 6) AS chi2_corrected FROM ag""",
-    // C(shared,2) per pair from the connector equi-join; integer total
-    "q405_butterflies" ->
-      """WITH nv AS (SELECT DISTINCT CAST(l_partkey AS BIGINT) AS n, CAST(l_orderkey AS BIGINT) AS v FROM lineitem), deg AS (SELECT v FROM nv GROUP BY v HAVING COUNT(*) >= 2), inc AS (SELECT nv.n, nv.v FROM nv JOIN deg ON nv.v = deg.v), p AS (SELECT a.n AS n1, b.n AS n2, CAST(COUNT(*) AS BIGINT) AS s FROM inc a JOIN inc b ON a.v = b.v AND a.n < b.n GROUP BY 1, 2 HAVING COUNT(*) >= 2), p2 AS (SELECT n1, n2, s, (s * (s - 1)) // 2 AS bf FROM p), t AS (SELECT CAST(SUM(bf) AS BIGINT) AS tb FROM p2), r AS (SELECT *, ROW_NUMBER() OVER (ORDER BY bf DESC, n1, n2) AS rn FROM p2) SELECT CAST(rn AS BIGINT) AS rank, n1, n2, s AS n_shared, CAST(bf AS BIGINT) AS butterflies, t.tb AS total_butterflies FROM r, t WHERE rn <= 10 ORDER BY rank""",
-    // minimax isotonic: prefix sums -> suffix-min per start -> max
-    "q406_isotonic" ->
-      """WITH b AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 2000000 AS x, CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS ys, CAST(COUNT(*) AS BIGINT) AS n FROM orders GROUP BY 1), rk AS (SELECT x, ys, n, ROW_NUMBER() OVER (ORDER BY x) AS rn, CAST(SUM(ys) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cp, CAST(SUM(n) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cc FROM b), pr AS (SELECT j.rn AS j, k.rn AS k, CAST(round(CAST(k.cp - (j.cp - j.ys) AS DOUBLE) / CAST(k.cc - (j.cc - j.n) AS DOUBLE), 12) AS DECIMAL(24,12)) AS avg FROM rk j JOIN rk k ON j.rn <= k.rn), m AS (SELECT j, k AS i, MIN(avg) OVER (PARTITION BY j ORDER BY k DESC ROWS UNBOUNDED PRECEDING) AS m FROM pr), f AS (SELECT i, MAX(m) AS f FROM m GROUP BY i) SELECT rk.x, rk.n, round(CAST(rk.ys AS DOUBLE) / CAST(rk.n AS DOUBLE), 6) AS raw_rate, round(CAST(f.f AS DOUBLE), 6) AS fitted_rate FROM rk JOIN f ON rk.rn = f.i ORDER BY rk.x""",
-    // the streamed store must equal the whole-corpus leaf census
-    "q402_stream_merkle" ->
-      """WITH h AS (SELECT CAST(concat('0x', substr(md5(concat_ws('|', coalesce(CAST(event_id AS VARCHAR), chr(0)), coalesce(CAST(user_id AS VARCHAR), chr(0)), coalesce(CAST(event_type AS VARCHAR), chr(0)), coalesce(CAST(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS VARCHAR), chr(0)))), 1, 13)) AS BIGINT) AS h FROM events) SELECT h % 1024 AS leaf, CAST(COUNT(*) AS BIGINT) AS n_rows, CAST(bit_xor(h) AS BIGINT) AS fp FROM h GROUP BY 1 ORDER BY leaf""",
-    // trimmed means + winsorized variances from the value domain
-    "q403_yuen_ttest" -> yuenSql,
-    // q361's recursion + a lag-24 naive denominator; ratio of the rounds
-    "q404_mase_backtest" ->
-      """WITH RECURSIVE h AS (SELECT event_type, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS vc FROM events GROUP BY 1, 2), o AS (SELECT event_type, CAST(vc AS DOUBLE) AS v, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hid) AS rn FROM h), nn AS (SELECT event_type, COUNT(*) AS n FROM o GROUP BY 1), rec AS (SELECT a.event_type, CAST(2 AS BIGINT) AS rn, b.v AS s, b.v - a.v AS b, CAST(0 AS DOUBLE) AS es, CAST(0 AS BIGINT) AS c FROM o a JOIN o b ON a.event_type = b.event_type AND a.rn = 1 AND b.rn = 2 UNION ALL SELECT r.event_type, r.rn + 1, 0.5 * x.v + 0.5 * (r.s + r.b), 0.5 * ((0.5 * x.v + 0.5 * (r.s + r.b)) - r.s) + 0.5 * r.b, r.es + abs(x.v - (r.s + r.b)), r.c + 1 FROM rec r JOIN o x ON x.event_type = r.event_type AND x.rn = r.rn + 1), sn AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS ns, CAST(SUM(abs(vc - lg)) AS BIGINT) AS sae FROM (SELECT event_type, vc, LAG(vc, 24) OVER (PARTITION BY event_type ORDER BY hid) AS lg FROM h) q WHERE lg IS NOT NULL GROUP BY 1) SELECT f.event_type, nn.n, f.c AS n_forecasts, round(f.es / CAST(f.c AS DOUBLE), 6) AS mae, round(CAST(sn.sae AS DOUBLE) / CAST(sn.ns AS DOUBLE), 6) AS mae_snaive, round(round(f.es / CAST(f.c AS DOUBLE), 6) / round(CAST(sn.sae AS DOUBLE) / CAST(sn.ns AS DOUBLE), 6), 6) AS mase FROM rec f JOIN nn ON nn.event_type = f.event_type AND f.rn = nn.n JOIN sn ON sn.event_type = f.event_type WHERE nn.n >= 3 ORDER BY f.event_type""",
-    // exponential mechanism: doubled rank utilities + Gumbel-max draw
-    "q400_dp_median" ->
-      """WITH e AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM orders), bv AS (SELECT v, CAST(COUNT(*) AS BIGINT) AS t FROM e GROUP BY v), rk AS (SELECT v, t, CAST(SUM(t) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c, CAST(SUM(t) OVER () AS BIGINT) AS n FROM bv), sc AS (SELECT v, c, n, round(0.125 * CAST(-abs(2 * c - t - n) AS DOUBLE) + (-ln(-ln((CAST(CAST(concat('0x', substr(md5(concat('dpm:', CAST(v AS VARCHAR))), 1, 13)) AS BIGINT) AS DOUBLE) + 0.5) / 4503599627370496.0))), 9) AS score FROM rk), mx AS (SELECT MAX(score) AS ms FROM sc) SELECT MAX(n) AS n, MIN(CASE WHEN c >= (n + 1) // 2 THEN v END) AS true_median, MIN(CASE WHEN score = mx.ms THEN v END) AS dp_median FROM sc, mx GROUP BY mx.ms""",
-    // content-addressed leaves; only differing ones survive the diff
-    "q401_merkle_diff" ->
-      """WITH base AS (SELECT o_orderkey, o_orderstatus, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM orders), drift AS (SELECT o_orderkey, o_orderstatus, CASE WHEN o_orderkey % 997 = 0 THEN cents + 1 ELSE cents END AS cents FROM base), ha AS (SELECT CAST(concat('0x', substr(md5(concat_ws('|', coalesce(CAST(o_orderkey AS VARCHAR), chr(0)), coalesce(CAST(o_orderstatus AS VARCHAR), chr(0)), coalesce(CAST(cents AS VARCHAR), chr(0)))), 1, 13)) AS BIGINT) AS h FROM base), hb AS (SELECT CAST(concat('0x', substr(md5(concat_ws('|', coalesce(CAST(o_orderkey AS VARCHAR), chr(0)), coalesce(CAST(o_orderstatus AS VARCHAR), chr(0)), coalesce(CAST(cents AS VARCHAR), chr(0)))), 1, 13)) AS BIGINT) AS h FROM drift), la AS (SELECT h % 1024 AS leaf, CAST(COUNT(*) AS BIGINT) AS n_a, CAST(bit_xor(h) AS BIGINT) AS fp_a FROM ha GROUP BY 1), lb AS (SELECT h % 1024 AS leaf, CAST(COUNT(*) AS BIGINT) AS n_b, CAST(bit_xor(h) AS BIGINT) AS fp_b FROM hb GROUP BY 1), j AS (SELECT COALESCE(la.leaf, lb.leaf) AS leaf, CAST(COALESCE(n_a, 0) AS BIGINT) AS n_a, CAST(COALESCE(n_b, 0) AS BIGINT) AS n_b, CAST(COALESCE(fp_a, 0) AS BIGINT) AS fp_a, CAST(COALESCE(fp_b, 0) AS BIGINT) AS fp_b FROM la FULL OUTER JOIN lb ON la.leaf = lb.leaf) SELECT leaf, CAST(leaf // 32 AS BIGINT) AS node, n_a, n_b, fp_a, fp_b FROM j WHERE fp_a <> fp_b OR n_a <> n_b ORDER BY leaf""",
-    // residual-domain rank lookup; the qhat row carries the coverage
-    "q397_conformal" ->
-      """WITH e AS (SELECT event_type AS g, CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y, CAST(concat('0x', substr(md5(concat('conf:', CAST(event_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 = 0 AS train FROM events), p AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n_train, CAST(round(CAST(SUM(y) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS DECIMAL(18,6)) AS pred FROM e WHERE train GROUP BY g), rs AS (SELECT e.g, p.n_train, p.pred, abs(CAST(e.y AS DECIMAL(18,6)) - p.pred) AS r, CAST(COUNT(*) AS BIGINT) AS t FROM e JOIN p ON e.g = p.g WHERE NOT train GROUP BY 1, 2, 3, 4), rk AS (SELECT *, CAST(SUM(t) OVER (PARTITION BY g ORDER BY r ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c, CAST(SUM(t) OVER (PARTITION BY g) AS BIGINT) AS n_cal FROM rs), rr AS (SELECT *, least(n_cal, ((n_cal + 1) * 9000 + 9999) // 10000) AS rkk FROM rk) SELECT g, MAX(n_train) AS n_train, MAX(n_cal) AS n_cal, CAST(MAX(pred) AS DOUBLE) AS pred, CAST(MIN(CASE WHEN c >= rkk THEN r END) AS DOUBLE) AS qhat, CAST(MAX(pred) - MIN(CASE WHEN c >= rkk THEN r END) AS DOUBLE) AS lo, CAST(MAX(pred) + MIN(CASE WHEN c >= rkk THEN r END) AS DOUBLE) AS hi, round(CAST(MIN(CASE WHEN c >= rkk THEN c END) AS DOUBLE) / CAST(MAX(n_cal) AS DOUBLE), 6) AS coverage FROM rr GROUP BY g ORDER BY g""",
-    // 64 signed counters vs the exact self-join moment
-    "q398_ams_f2" ->
-      """WITH c AS (SELECT CAST(user_id AS VARCHAR) AS u, CAST(COUNT(*) AS BIGINT) AS c FROM events GROUP BY 1), jj AS (SELECT unnest(range(0, 64)) AS j), sgn AS (SELECT jj.j, c.c, 1 - 2 * (CAST(concat('0x', substr(md5(concat('ams:', CAST(jj.j AS VARCHAR), ':', c.u)), 1, 13)) AS BIGINT) % 2) AS s FROM c, jj), z AS (SELECT j, SUM(CAST(s * c AS DECIMAL(38,0))) AS z FROM sgn GROUP BY j), zz AS (SELECT SUM(z * z) AS zz, CAST(COUNT(*) AS BIGINT) AS nk FROM z), ex AS (SELECT SUM(CAST(c AS DECIMAL(38,0)) * CAST(c AS DECIMAL(38,0))) AS f2, CAST(COUNT(*) AS BIGINT) AS n_keys FROM c) SELECT n_keys, CAST(f2 AS DOUBLE) AS f2_exact, round(CAST(zz AS DOUBLE) / CAST(nk AS DOUBLE), 6) AS f2_ams, round((CAST(zz AS DOUBLE) / CAST(nk AS DOUBLE) - CAST(f2 AS DOUBLE)) / CAST(f2 AS DOUBLE), 6) AS rel_error FROM ex, zz""",
-    // one cell store, per-window registers by ts filter, q379's finish
-    "q399_sliding_hll" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) AS t FROM events), mm AS (SELECT MIN(t) AS tmin, (MIN(t) + MAX(t)) // 2 AS mid FROM e), h AS (SELECT user_id, t, CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 13)) AS BIGINT) AS hh FROM e), cells AS (SELECT hh % 256 AS j, CASE WHEN hh // 256 = 0 THEN 45 ELSE 45 - length(bin(hh // 256)) END AS rho, MAX(t) AS max_ts FROM h GROUP BY 1, 2), wc AS (SELECT 'w_all' AS g, j, rho FROM cells, mm WHERE max_ts >= mm.tmin UNION ALL SELECT 'w_recent', j, rho FROM cells, mm WHERE max_ts >= mm.mid + 1), regs AS (SELECT g, j, MAX(rho) AS m FROM wc GROUP BY 1, 2), agg AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n_regs, SUM(CAST(round(pow(2.0, -m), 18) AS DECIMAL(38,18))) AS sp FROM regs GROUP BY g), e2 AS (SELECT g, n_regs, 256 - n_regs AS v_empty, 0.7213 / (1.0 + 1.079 / 256.0) * 65536.0 / CAST(sp + CAST(256 - n_regs AS DECIMAL(38,18)) AS DOUBLE) AS eraw FROM agg), ex AS (SELECT 'w_all' AS g, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact FROM e, mm WHERE t >= mm.tmin UNION ALL SELECT 'w_recent', CAST(COUNT(DISTINCT user_id) AS BIGINT) FROM e, mm WHERE t >= mm.mid + 1) SELECT e2.g, e2.n_regs, CAST(e2.v_empty AS BIGINT) AS v_empty, round(CASE WHEN eraw <= 640.0 AND v_empty > 0 THEN 256.0 * ln(256.0 / CAST(v_empty AS DOUBLE)) ELSE eraw END, 6) AS estimate, ex.n_exact, round((CASE WHEN eraw <= 640.0 AND v_empty > 0 THEN 256.0 * ln(256.0 / CAST(v_empty AS DOUBLE)) ELSE eraw END - CAST(n_exact AS DOUBLE)) / CAST(n_exact AS DOUBLE), 6) AS rel_error FROM e2 JOIN ex ON e2.g = ex.g ORDER BY e2.g""",
-    // EM unrolled to 10 materialized state CTEs over the pattern census
-    "q396_fellegi_sunter" -> fsSql(10),
-    // PAA means on the grid; exact-rank breakpoints; ordered string_agg
-    "q392_sax_symbols" ->
-      """WITH h AS (SELECT user_id AS k, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents FROM events GROUP BY 1, 2), paa AS (SELECT k, hid // 4 AS seg, CAST(round(CAST(SUM(cents) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS DECIMAL(18,6)) AS m FROM h GROUP BY 1, 2), d AS (SELECT m, CAST(COUNT(*) AS BIGINT) AS t FROM paa GROUP BY m), rk AS (SELECT m, CAST(SUM(t) OVER (ORDER BY m ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c, CAST(SUM(t) OVER () AS BIGINT) AS n FROM d), bp AS (SELECT MIN(CASE WHEN c >= (n * 1 + 3) // 4 THEN m END) AS b1, MIN(CASE WHEN c >= (n * 2 + 3) // 4 THEN m END) AS b2, MIN(CASE WHEN c >= (n * 3 + 3) // 4 THEN m END) AS b3 FROM rk), sym AS (SELECT k, seg, (CASE WHEN m > bp.b1 THEN 1 ELSE 0 END + CASE WHEN m > bp.b2 THEN 1 ELSE 0 END + CASE WHEN m > bp.b3 THEN 1 ELSE 0 END) AS si FROM paa, bp) SELECT k, CAST(COUNT(*) AS BIGINT) AS n_segments, string_agg(['a','b','c','d'][si + 1], '' ORDER BY seg) AS sax FROM sym GROUP BY k ORDER BY k""",
-    // pairwise mean-abs-differences from prefix sums, zero pairs built
-    "q393_energy_distance" ->
-      """WITH e AS (SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v, event_type = 'purchase' AS isa FROM events WHERE event_type IN ('purchase', 'view')), bv AS (SELECT v, CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS ta, CAST(SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS BIGINT) AS tb FROM e GROUP BY v), ck AS (SELECT v, ta, tb, CAST(SUM(ta) OVER w AS BIGINT) AS ca, CAST(SUM(tb) OVER w AS BIGINT) AS cb, SUM(CAST(v AS DECIMAL(38,0)) * CAST(ta AS DECIMAL(38,0))) OVER w AS sa, SUM(CAST(v AS DECIMAL(38,0)) * CAST(tb AS DECIMAL(38,0))) OVER w AS sb, CAST(SUM(ta) OVER () AS BIGINT) AS na, CAST(SUM(tb) OVER () AS BIGINT) AS nb, SUM(CAST(v AS DECIMAL(38,0)) * CAST(ta AS DECIMAL(38,0))) OVER () AS sat, SUM(CAST(v AS DECIMAL(38,0)) * CAST(tb AS DECIMAL(38,0))) OVER () AS sbt FROM bv WINDOW w AS (ORDER BY v ROWS UNBOUNDED PRECEDING)), ag AS (SELECT MAX(na) AS n_a, MAX(nb) AS n_b, SUM(CAST(ta AS DECIMAL(38,0)) * (CAST(v AS DECIMAL(38,0)) * CAST(cb AS DECIMAL(38,0)) - sb + (sbt - sb) - CAST(v AS DECIMAL(38,0)) * (CAST(nb AS DECIMAL(38,0)) - CAST(cb AS DECIMAL(38,0))))) AS axy, SUM(CAST(ta AS DECIMAL(38,0)) * (CAST(v AS DECIMAL(38,0)) * CAST(ca AS DECIMAL(38,0)) - sa + (sat - sa) - CAST(v AS DECIMAL(38,0)) * (CAST(na AS DECIMAL(38,0)) - CAST(ca AS DECIMAL(38,0))))) AS axx, SUM(CAST(tb AS DECIMAL(38,0)) * (CAST(v AS DECIMAL(38,0)) * CAST(cb AS DECIMAL(38,0)) - sb + (sbt - sb) - CAST(v AS DECIMAL(38,0)) * (CAST(nb AS DECIMAL(38,0)) - CAST(cb AS DECIMAL(38,0))))) AS byy FROM ck) SELECT n_a, n_b, round(2.0 * CAST(axy AS DOUBLE) / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)) - CAST(axx AS DOUBLE) / (CAST(n_a AS DOUBLE) * CAST(n_a AS DOUBLE)) - CAST(byy AS DOUBLE) / (CAST(n_b AS DOUBLE) * CAST(n_b AS DOUBLE)), 6) AS energy FROM ag""",
-    // discrete-rank lookups for the median and both CI bounds
-    "q394_median_ci" ->
-      """WITH e AS (SELECT o_orderpriority AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM orders), bv AS (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS t FROM e GROUP BY 1, 2), rk AS (SELECT g, v, CAST(SUM(t) OVER (PARTITION BY g ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c, CAST(SUM(t) OVER (PARTITION BY g) AS BIGINT) AS n FROM bv), rr AS (SELECT g, v, c, n, (n + 1) // 2 AS rmed, greatest(1, CAST(floor((CAST(n AS DOUBLE) - 1.959964 * sqrt(CAST(n AS DOUBLE))) / 2.0) AS BIGINT)) AS rlo, least(n, 1 + CAST(ceil((CAST(n AS DOUBLE) + 1.959964 * sqrt(CAST(n AS DOUBLE))) / 2.0) AS BIGINT)) AS rhi FROM rk) SELECT g, MAX(n) AS n, MIN(CASE WHEN c >= rmed THEN v END) AS median, MIN(CASE WHEN c >= rlo THEN v END) AS ci_lo, MIN(CASE WHEN c >= rhi THEN v END) AS ci_hi FROM rr GROUP BY g ORDER BY g""",
-    // the FFD fold replayed per partition: bins as LIST state in a
-    // parallel recursive CTE (x/y lambda names distinct per the §6 rule)
-    "q389_compaction_plan" ->
-      """WITH RECURSIVE f AS (SELECT p_brand AS part, CAST(p_partkey AS BIGINT) AS id, CAST(CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS BIGINT) % 134217728 AS BIGINT) + 1 AS sz FROM part), it AS (SELECT part, id, sz, ROW_NUMBER() OVER (PARTITION BY part ORDER BY sz DESC, id) AS rn FROM f), rec AS (SELECT part, CAST(1 AS BIGINT) AS rn, id, sz, CAST(1 AS BIGINT) AS bin, [CAST(134217728 - sz AS BIGINT)] AS rem FROM it WHERE rn = 1 UNION ALL SELECT i.part, i.rn, i.id, i.sz, CAST(CASE WHEN len(list_filter(range(1, len(r.rem) + 1), x -> r.rem[x] >= i.sz)) > 0 THEN list_filter(range(1, len(r.rem) + 1), x -> r.rem[x] >= i.sz)[1] ELSE len(r.rem) + 1 END AS BIGINT) AS bin, CASE WHEN len(list_filter(range(1, len(r.rem) + 1), x -> r.rem[x] >= i.sz)) > 0 THEN list_transform(range(1, len(r.rem) + 1), z -> CASE WHEN z = list_filter(range(1, len(r.rem) + 1), y -> r.rem[y] >= i.sz)[1] THEN r.rem[z] - i.sz ELSE r.rem[z] END) ELSE list_append(r.rem, CAST(134217728 - i.sz AS BIGINT)) END AS rem FROM rec r JOIN it i ON i.part = r.part AND i.rn = r.rn + 1) SELECT part, id, sz AS size, bin FROM rec ORDER BY part, id""",
-    // weighted-bucket assignment over DISTINCT units; exact-rational chi2
-    "q390_srm_check" ->
-      """WITH u AS (SELECT DISTINCT user_id FROM events), a AS (SELECT CASE WHEN b < 2 THEN 'control' WHEN b < 3 THEN 't1' ELSE 't2' END AS arm FROM (SELECT CAST(concat('0x', substr(md5(concat('exp42:', CAST(user_id AS VARCHAR))), 1, 13)) AS BIGINT) % 4 AS b FROM u)), c0 AS (SELECT arm, CAST(COUNT(*) AS BIGINT) AS n_observed FROM a GROUP BY arm), wt AS (SELECT unnest(['control', 't1', 't2']) AS arm, unnest([2, 1, 1]) AS wgt), c AS (SELECT wt.arm, CAST(COALESCE(c0.n_observed, 0) AS BIGINT) AS n_observed, CAST(wt.wgt AS BIGINT) AS wgt FROM wt LEFT JOIN c0 ON wt.arm = c0.arm), t AS (SELECT CAST(SUM(n_observed) AS BIGINT) AS n FROM c), g AS (SELECT arm, n_observed, wgt, t.n, CAST(round(CAST(CAST(n_observed AS DECIMAL(38,0)) * 4 - CAST(t.n AS DECIMAL(38,0)) * CAST(wgt AS DECIMAL(38,0)) AS DOUBLE) * CAST(CAST(n_observed AS DECIMAL(38,0)) * 4 - CAST(t.n AS DECIMAL(38,0)) * CAST(wgt AS DECIMAL(38,0)) AS DOUBLE) / (CAST(t.n AS DOUBLE) * CAST(wgt AS DOUBLE) * 4.0), 9) AS DECIMAL(18,9)) AS term FROM c, t), s AS (SELECT SUM(term) AS ts FROM g) SELECT arm, n_observed, round(CAST(n AS DOUBLE) * CAST(wgt AS DOUBLE) / 4.0, 6) AS expected, round(CAST(s.ts AS DOUBLE), 6) AS chi2, CAST(s.ts AS DOUBLE) > 9.21034 AS srm FROM g, s ORDER BY arm""",
-    // value-domain rank-interval overlap: exact tie apportioning
-    "q391_trimmed_mean" ->
-      """WITH e AS (SELECT o_orderpriority AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM orders), bv AS (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS t FROM e GROUP BY 1, 2), rk AS (SELECT g, v, t, CAST(SUM(t) OVER (PARTITION BY g ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c, CAST(SUM(t) OVER (PARTITION BY g) AS BIGINT) AS n FROM bv), kp AS (SELECT g, v, t, c, n, (n * 500) // 10000 AS l FROM rk), ov AS (SELECT g, v, t, n, l, greatest(0, least(c, n - l) - greatest(c - t, l)) AS keep FROM kp) SELECT g, MAX(n) AS n, CAST(MAX(l) AS BIGINT) AS n_trimmed_each, round(CAST(SUM(CAST(v AS DECIMAL(38,0)) * CAST(keep AS DECIMAL(38,0))) AS DOUBLE) / (CAST(MAX(n) AS DOUBLE) - 2.0 * CAST(MAX(l) AS DOUBLE)), 6) AS trimmed_mean, round(CAST(SUM(CAST(v AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0))) AS DOUBLE) / CAST(MAX(n) AS DOUBLE), 6) AS raw_mean FROM ov GROUP BY g ORDER BY g""",
-    // integer cross-multiplied cumulative counts; min attaining value
-    "q385_ks_exact" ->
-      """WITH e AS (SELECT CAST(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS DOUBLE) AS v, event_type = 'purchase' AS isa FROM events WHERE event_type IN ('purchase', 'view')), bv AS (SELECT v, CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS ta, CAST(SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS BIGINT) AS tb FROM e GROUP BY v), ck AS (SELECT v, CAST(SUM(ta) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS ca, CAST(SUM(tb) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cb, CAST(SUM(ta) OVER () AS BIGINT) AS na, CAST(SUM(tb) OVER () AS BIGINT) AS nb FROM bv), nm AS (SELECT v, abs(CAST(ca AS DECIMAL(38,0)) * CAST(nb AS DECIMAL(38,0)) - CAST(cb AS DECIMAL(38,0)) * CAST(na AS DECIMAL(38,0))) AS num, na, nb FROM ck), mx AS (SELECT MAX(num) AS mnum FROM nm) SELECT MAX(na) AS n_a, MAX(nb) AS n_b, round(CAST(mx.mnum AS DOUBLE) / (CAST(MAX(na) AS DOUBLE) * CAST(MAX(nb) AS DOUBLE)), 6) AS d_stat, MIN(CASE WHEN num = mx.mnum THEN v END) AS at_v FROM nm, mx GROUP BY mx.mnum""",
-    // key-domain counts squared; top contributors by exact product
-    "q386_join_fanout" ->
-      """WITH cl AS (SELECT CAST(l_partkey AS VARCHAR) AS k, CAST(COUNT(*) AS BIGINT) AS n_left FROM lineitem GROUP BY 1), j AS (SELECT k, n_left, n_left AS n_right, CAST(n_left AS DECIMAL(38,0)) * CAST(n_left AS DECIMAL(38,0)) AS np FROM cl), t AS (SELECT SUM(np) AS tp FROM j), r AS (SELECT *, ROW_NUMBER() OVER (ORDER BY np DESC, k) AS rn FROM j) SELECT CAST(rn AS BIGINT) AS rank, k, n_left, n_right, CAST(np AS BIGINT) AS n_pairs, CAST(t.tp AS BIGINT) AS total_pairs, round(CAST(np AS DOUBLE) / CAST(t.tp AS DOUBLE), 6) AS share FROM r, t WHERE rn <= 20 ORDER BY rank""",
-    // first-occurrence census then the strict-precedence pair join
-    "q387_eventually_follows" ->
-      """WITH f AS (SELECT user_id AS c, event_type AS act, MIN(epoch_ns(ts)) AS t FROM events GROUP BY 1, 2), n AS (SELECT CAST(COUNT(DISTINCT c) AS BIGINT) AS nc FROM f) SELECT x.act AS a, y.act AS b, CAST(COUNT(*) AS BIGINT) AS n_cases, round(CAST(COUNT(*) AS DOUBLE) / CAST(n.nc AS DOUBLE), 6) AS case_share FROM f x JOIN f y ON x.c = y.c AND x.act <> y.act AND x.t < y.t, n GROUP BY x.act, y.act, n.nc ORDER BY a, b""",
-    // relaxation unrolled to a 20-round CTE chain (q224 fixpoint pattern)
-    "q388_critical_path" -> longestPathSql(20),
-    // the TAT recursion replayed per user; all integer seconds
-    "q384_rate_limit" ->
-      """WITH RECURSIVE e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS t, event_id FROM events), o AS (SELECT user_id, t, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY t, event_id) AS rn FROM e), nn AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n FROM o GROUP BY 1), rec AS (SELECT user_id, CAST(1 AS BIGINT) AS rn, CAST(t + 60 AS BIGINT) AS tat, CAST(1 AS BIGINT) AS ok FROM o WHERE rn = 1 UNION ALL SELECT r.user_id, r.rn + 1, CAST(CASE WHEN e.t >= r.tat - 240 THEN greatest(r.tat, e.t) + 60 ELSE r.tat END AS BIGINT), r.ok + CASE WHEN e.t >= r.tat - 240 THEN 1 ELSE 0 END FROM rec r JOIN o e ON e.user_id = r.user_id AND e.rn = r.rn + 1) SELECT f.user_id, nn.n AS n_events, f.ok AS n_allowed, CAST(nn.n - f.ok AS BIGINT) AS n_rejected FROM rec f JOIN nn ON nn.user_id = f.user_id AND f.rn = nn.n ORDER BY f.user_id""",
-    // sorted prefix sums find the water level; floor + largest remainder
-    "q380_waterfill" ->
-      """WITH li AS (SELECT l_orderkey AS g, CAST(l_linenumber AS BIGINT) AS l, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS d FROM lineitem GROUP BY 1, 2), c AS (SELECT g, l, d, CAST((SUM(d) OVER (PARTITION BY g) * 3) // 5 AS BIGINT) AS cap FROM li), r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY g ORDER BY d, l) AS rn, COUNT(*) OVER (PARTITION BY g) AS n, CAST(SUM(d) OVER (PARTITION BY g ORDER BY d, l ROWS UNBOUNDED PRECEDING) AS BIGINT) AS pre FROM c), s AS (SELECT *, d * (n - rn + 1) <= cap - (pre - d) AS sat FROM r), t AS (SELECT *, CAST(SUM(CASE WHEN sat THEN 1 ELSE 0 END) OVER (PARTITION BY g) AS BIGINT) AS ns, CAST(SUM(CASE WHEN sat THEN d ELSE 0 END) OVER (PARTITION BY g) AS BIGINT) AS ss FROM s), u AS (SELECT *, CASE WHEN n - ns > 0 THEN (cap - ss) // (n - ns) END AS lvl, CASE WHEN n - ns > 0 THEN (cap - ss) % (n - ns) END AS lft, ROW_NUMBER() OVER (PARTITION BY g, sat ORDER BY l) AS rnu FROM t) SELECT g AS l_orderkey, l AS l_linenumber, d AS demand, CAST(CASE WHEN sat THEN d ELSE lvl + CASE WHEN rnu <= lft THEN 1 ELSE 0 END END AS BIGINT) AS alloc FROM u ORDER BY l_orderkey, l_linenumber""",
-    // count-of-counts census; singleton mass N1/N per language
-    "q377_good_turing" ->
-      """WITH w AS (SELECT lang, unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w FROM documents), c AS (SELECT lang, w, CAST(COUNT(*) AS BIGINT) AS c FROM w GROUP BY 1, 2) SELECT lang, CAST(SUM(c) AS BIGINT) AS n_tokens, CAST(COUNT(*) AS BIGINT) AS n_types, CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_singletons, CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_doubletons, round(CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE) / CAST(SUM(c) AS DOUBLE), 6) AS unseen_mass FROM c GROUP BY lang ORDER BY lang""",
-    // doubled-rank replay over the value domain; R2^2/n terms on the grid
-    "q373_kruskal_wallis" ->
-      """WITH bv AS (SELECT CAST(o_totalprice AS DOUBLE) AS v, CAST(o_orderpriority AS VARCHAR) AS g, CAST(COUNT(*) AS BIGINT) AS tvg FROM orders GROUP BY 1, 2), byv AS (SELECT v, CAST(SUM(tvg) AS BIGINT) AS t FROM bv GROUP BY v), rk AS (SELECT v, t, 2 * SUM(t) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) - t + 1 AS r2 FROM byv), pg AS (SELECT g, CAST(SUM(tvg) AS BIGINT) AS n_g, SUM(CAST(tvg AS DECIMAL(38,0)) * CAST(r2 AS DECIMAL(38,0))) AS r2sum FROM bv JOIN rk USING (v) GROUP BY g), pt AS (SELECT g, n_g, r2sum, CAST(round(CAST(r2sum AS DOUBLE) * CAST(r2sum AS DOUBLE) / CAST(n_g AS DOUBLE), 6) AS DECIMAL(38,6)) AS term FROM pg), ti AS (SELECT SUM(CAST(t AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0)) - CAST(t AS DECIMAL(38,0))) AS ties FROM rk), ag AS (SELECT CAST(SUM(n_g) AS BIGINT) AS n, SUM(term) AS ts FROM pt) SELECT g, n_g, CAST(r2sum AS DOUBLE) / 2.0 AS rank_sum, round(3.0 / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0)) * CAST(ts AS DOUBLE) - 3.0 * (CAST(n AS DOUBLE) + 1.0), 6) AS h_stat, round((3.0 / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0)) * CAST(ts AS DOUBLE) - 3.0 * (CAST(n AS DOUBLE) + 1.0)) / (1.0 - CAST(ties AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - CAST(n AS DOUBLE))), 6) AS h_tie_corrected FROM pt, ti, ag ORDER BY g""",
-    // the bitmap is the mechanism, not the meaning: the overlap matrix
-    // replays as the plain distinct-pair join
-    "q366_audience_overlap" ->
-      """WITH s AS (SELECT DISTINCT event_type AS g, user_id AS u FROM events), n AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n FROM s GROUP BY 1), p AS (SELECT a.g AS ga, b.g AS gb, CAST(COUNT(*) AS BIGINT) AS n_inter FROM s a JOIN s b ON a.u = b.u AND a.g < b.g GROUP BY 1, 2) SELECT p.ga, p.gb, na.n AS n_a, nb.n AS n_b, p.n_inter, round(CAST(p.n_inter AS DOUBLE) / CAST(na.n + nb.n - p.n_inter AS DOUBLE), 6) AS jaccard FROM p JOIN n na ON na.g = p.ga JOIN n nb ON nb.g = p.gb ORDER BY p.ga, p.gb""",
-    // distinct weights => the MSF is unique: sequential Prim (visited
-    // list carried through a recursive CTE) must agree edge-for-edge
-    // with the bulk-parallel Boruvka
-    "q367_boruvka_msf" ->
-      """WITH RECURSIVE k AS (SELECT CAST(ROW_NUMBER() OVER (ORDER BY s_suppkey) AS BIGINT) AS r FROM supplier), n AS (SELECT MAX(r) AS mx FROM k), e AS (SELECT r AS src, r + d AS dst, CAST(concat('0x', substr(md5(CAST(r AS VARCHAR) || ':' || CAST(r + d AS VARCHAR)), 1, 13)) AS BIGINT) AS w FROM k CROSS JOIN (VALUES (CAST(1 AS BIGINT)), (CAST(2 AS BIGINT)), (CAST(5 AS BIGINT)), (CAST(11 AS BIGINT))) AS dd(d) CROSS JOIN n WHERE r + d <= mx), eb AS (SELECT src, dst, w FROM e UNION ALL SELECT dst, src, w FROM e), prim AS (SELECT CAST(0 AS BIGINT) AS step, [CAST(1 AS BIGINT)] AS vis, CAST(NULL AS BIGINT) AS esrc, CAST(NULL AS BIGINT) AS edst, CAST(NULL AS BIGINT) AS ew UNION ALL SELECT t.step + 1, list_append(t.vis, CAST(t.m['dst'] AS BIGINT)), CAST(t.m['src'] AS BIGINT), CAST(t.m['dst'] AS BIGINT), CAST(t.m['w'] AS BIGINT) FROM (SELECT p.step AS step, p.vis AS vis, min(struct_pack(w := eb.w, src := eb.src, dst := eb.dst)) AS m FROM prim p JOIN eb ON list_contains(p.vis, eb.src) AND NOT list_contains(p.vis, eb.dst) GROUP BY p.step, p.vis) t) SELECT LEAST(esrc, edst) AS src, GREATEST(esrc, edst) AS dst, ew AS w FROM prim WHERE step >= 1 ORDER BY src, dst""",
-    // moments exact in DECIMAL(38,0); t and Welch df in pinned doubles
-    "q362_welch_ttest" -> welchSql,
-    // the streamed moment store must equal the batch test bit-for-bit
-    "q433_stream_welch" -> welchSql,
-    // the clamp makes each step depend on the CLAMPED previous value —
-    // replay is necessarily sequential per key
-    "q363_clamped_balance" ->
-      """WITH RECURSIVE li AS (SELECT l_suppkey AS k, l_orderkey * 8 + l_linenumber AS seq, CASE WHEN l_returnflag = 'R' THEN -CAST(l_quantity AS BIGINT) ELSE CAST(l_quantity AS BIGINT) END AS d FROM lineitem), o AS (SELECT k, d, ROW_NUMBER() OVER (PARTITION BY k ORDER BY seq, d) AS rn FROM li), nn AS (SELECT k, COUNT(*) AS n FROM o GROUP BY 1), rec AS (SELECT k, CAST(0 AS BIGINT) AS rn, CAST(0 AS BIGINT) AS h, CAST(0 AS BIGINT) AS lo, CAST(0 AS BIGINT) AS hi FROM nn UNION ALL SELECT r.k, r.rn + 1, LEAST(CAST(500 AS BIGINT), GREATEST(CAST(0 AS BIGINT), r.h + x.d)), r.lo + CASE WHEN r.h + x.d < 0 THEN 1 ELSE 0 END, r.hi + CASE WHEN r.h + x.d > 500 THEN 1 ELSE 0 END FROM rec r JOIN o x ON x.k = r.k AND x.rn = r.rn + 1) SELECT f.k AS l_suppkey, nn.n AS n_moves, f.h AS on_hand, f.lo AS n_shortages, f.hi AS n_overflows FROM rec f JOIN nn ON nn.k = f.k AND f.rn = nn.n ORDER BY f.k""",
-    // pure integer arithmetic: floor shares + largest-remainder top-up
-    "q364_prorate_cents" ->
-      """WITH li AS (SELECT l_orderkey, l_orderkey * 8 + l_linenumber AS line_id, CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS w FROM lineitem), o AS (SELECT o_orderkey, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 10 AS disc FROM orders), j AS (SELECT l_orderkey, line_id, w, disc FROM li JOIN o ON l_orderkey = o_orderkey), b AS (SELECT *, CAST(SUM(w) OVER (PARTITION BY l_orderkey) AS BIGINT) AS tw FROM j), c AS (SELECT *, disc * w AS num FROM b WHERE tw > 0), d AS (SELECT *, num // tw AS fs, num % tw AS rem FROM c), e AS (SELECT *, CAST(disc - SUM(fs) OVER (PARTITION BY l_orderkey) AS BIGINT) AS leftover, ROW_NUMBER() OVER (PARTITION BY l_orderkey ORDER BY rem DESC, line_id, w) AS rk FROM d) SELECT l_orderkey, line_id, w, fs + CASE WHEN rk <= leftover THEN 1 ELSE 0 END AS alloc FROM e ORDER BY l_orderkey, line_id""",
-    // densities on the 1e-9 grid, cumulative differences exact in DECIMAL
-    "q365_t_closeness" ->
-      """WITH c AS (SELECT c_mktsegment AS seg, CAST(floor(CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) / 100000.0) AS BIGINT) AS s FROM customer), cells AS (SELECT seg, s, COUNT(*) AS n FROM c GROUP BY 1, 2), ct AS (SELECT seg, CAST(SUM(n) AS BIGINT) AS cn FROM cells GROUP BY 1), g AS (SELECT s, CAST(SUM(n) AS BIGINT) AS gn FROM cells GROUP BY 1), gt AS (SELECT CAST(SUM(gn) AS BIGINT) AS nt FROM g), spine AS (SELECT ct.seg, ct.cn, g.s, g.gn, gt.nt FROM ct CROSS JOIN g CROSS JOIN gt), jj AS (SELECT sp.seg, sp.cn, sp.s, CAST(round(CAST(coalesce(cells.n, 0) AS DOUBLE) / CAST(sp.cn AS DOUBLE), 9) AS DECIMAL(18,9)) AS p, CAST(round(CAST(sp.gn AS DOUBLE) / CAST(sp.nt AS DOUBLE), 9) AS DECIMAL(18,9)) AS q FROM spine sp LEFT JOIN cells ON cells.seg = sp.seg AND cells.s = sp.s), cd AS (SELECT seg, cn, s, SUM(p - q) OVER (PARTITION BY seg ORDER BY s ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cdiff FROM jj), f AS (SELECT seg, cn AS class_size, COUNT(*) AS m_categories, SUM(abs(cdiff)) AS es FROM cd GROUP BY 1, 2) SELECT seg AS c_mktsegment, class_size, CAST(m_categories AS BIGINT) AS m_categories, round(CAST(es AS DOUBLE) / (CAST(m_categories AS DOUBLE) - 1.0), 6) AS emd, CAST(round(CAST(es AS DOUBLE) / (CAST(m_categories AS DOUBLE) - 1.0), 6) <= 0.2 AS INTEGER) AS close FROM f ORDER BY c_mktsegment""",
-    // per-lag Pearson over shifted hour pairs, DECIMAL(38,0) exact sums
-    "q360_crosscorr" ->
-      """WITH h AS (SELECT epoch_ns(ts) // 1000000000 // 3600 AS t, CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS x, CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS y FROM events GROUP BY 1), l AS (SELECT * FROM (VALUES (-3), (-2), (-1), (0), (1), (2), (3)) AS t(lag)), p AS (SELECT l.lag, a.x, b.y FROM l CROSS JOIN h a JOIN h b ON b.t = a.t + l.lag), s AS (SELECT lag, COUNT(*) AS np, SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(y AS DECIMAL(38,0))) AS sy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))) AS sxx, SUM(CAST(y AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS syy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS sxy FROM p GROUP BY 1) SELECT lag, CAST(np AS BIGINT) AS n_pairs, round((CAST(np AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (sqrt(CAST(np AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) * sqrt(CAST(np AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) AS r FROM s ORDER BY lag""",
-    // the backtest recursion carries (s, b, err-sum, smape-sum, count)
-    // in series order — double accumulation replayed term for term
-    "q361_holt_backtest" ->
-      """WITH RECURSIVE h AS (SELECT event_type, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS DOUBLE) AS v FROM events GROUP BY 1, 2), o AS (SELECT event_type, v, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hid) AS rn FROM h), nn AS (SELECT event_type, COUNT(*) AS n FROM o GROUP BY 1), rec AS (SELECT a.event_type, CAST(2 AS BIGINT) AS rn, b.v AS s, b.v - a.v AS b, CAST(0 AS DOUBLE) AS es, CAST(0 AS DOUBLE) AS sm, CAST(0 AS BIGINT) AS c FROM o a JOIN o b ON a.event_type = b.event_type AND a.rn = 1 AND b.rn = 2 UNION ALL SELECT r.event_type, r.rn + 1, 0.5 * x.v + 0.5 * (r.s + r.b), 0.5 * ((0.5 * x.v + 0.5 * (r.s + r.b)) - r.s) + 0.5 * r.b, r.es + abs(x.v - (r.s + r.b)), r.sm + CASE WHEN abs(x.v) + abs(r.s + r.b) = 0 THEN 0.0 ELSE 2.0 * abs(x.v - (r.s + r.b)) / (abs(x.v) + abs(r.s + r.b)) END, r.c + 1 FROM rec r JOIN o x ON x.event_type = r.event_type AND x.rn = r.rn + 1) SELECT f.event_type, nn.n, f.c AS n_forecasts, round(f.es / CAST(f.c AS DOUBLE), 6) AS mae, round(f.sm / CAST(f.c AS DOUBLE), 6) AS smape FROM rec f JOIN nn ON nn.event_type = f.event_type AND f.rn = nn.n WHERE nn.n >= 3 ORDER BY f.event_type""",
-    // the stream-fed sketch store must equal the whole-corpus replay
-    "q359_stream_sketch_store" ->
-      """WITH e AS (SELECT event_id AS id, CAST(value AS DOUBLE) AS v, CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR)), 1, 13)) AS BIGINT) AS h FROM events), m AS (SELECT v FROM (SELECT v, ROW_NUMBER() OVER (ORDER BY h, id) AS rn FROM e) WHERE rn <= 256), arr AS (SELECT list_sort(list(v)) AS vals, COUNT(*) AS kk FROM m), tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM e), spine AS (SELECT * FROM (VALUES (0.5), (0.9), (0.99)) AS t(q)) SELECT q AS quantile, vals[CAST(GREATEST(1, CEIL(q * kk)) AS INTEGER)] AS est, CAST(kk AS BIGINT) AS sample_k, n_total FROM spine, arr, tot ORDER BY quantile""",
-    // layout never changes answers: same filtered aggregate as q184
-    "q358_optimize_hilbert" ->
-      """WITH b AS (SELECT MAX(o_custkey) // 8 AS ct, MAX(o_orderkey) // 8 AS ot FROM orders) SELECT o_orderstatus, COUNT(*) AS n, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price FROM orders, b WHERE o_custkey BETWEEN 1 AND ct AND o_orderkey BETWEEN 1 AND ot GROUP BY 1 ORDER BY o_orderstatus""",
-    // the greedy MMR walk replayed as a recursive CTE carrying the
-    // selected list; scores on the 4-decimal grid where pcos == VecCosine
-    "q357_mmr_rerank" ->
-      s"""$VEC_MACROS; WITH RECURSIVE qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 5), sc AS (SELECT qv.qid, e2.vec_id AS nid, round(pcos(qv.qe, e2.embedding), 4) AS rel, e2.embedding AS nv FROM qv CROSS JOIN embeddings e2 WHERE e2.vec_id <> qv.qid), c0 AS (SELECT qid, nid, rel, nv, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY rel DESC NULLS LAST, nid) AS rnk FROM sc), cand AS (SELECT qid, list(struct_pack(nid := nid, rel := rel, nv := nv) ORDER BY nid) AS cs FROM c0 WHERE rnk <= 24 GROUP BY qid), rec AS (SELECT qid, CAST(0 AS BIGINT) AS step, CAST([] AS BIGINT[]) AS sel FROM cand UNION ALL SELECT r.qid, r.step + 1, list_append(r.sel, list_reduce(list_filter(list_transform(range(1, len(c.cs) + 1), jj -> struct_pack(s := 0.7 * c.cs[CAST(jj AS INTEGER)]['rel'] - 0.3 * (CASE WHEN len(r.sel) = 0 THEN 0.0 ELSE list_reduce(list_transform(r.sel, si -> round(pcos(c.cs[CAST(jj AS INTEGER)]['nv'], c.cs[CAST(si AS INTEGER)]['nv']), 4)), (m1, m2) -> CASE WHEN m2 > m1 THEN m2 ELSE m1 END) END), j := jj, ok := NOT list_contains(r.sel, jj))), st -> st['ok']), (a1, e1) -> CASE WHEN e1['s'] > a1['s'] THEN e1 ELSE a1 END)['j']) FROM rec r JOIN cand c ON c.qid = r.qid WHERE r.step < 8) SELECT r.qid, r.step, CAST(c.cs[CAST(r.sel[CAST(r.step AS INTEGER)] AS INTEGER)]['nid'] AS BIGINT) AS nid FROM rec r JOIN cand c ON c.qid = r.qid WHERE r.step >= 1 ORDER BY r.qid, r.step""",
-    // log-only percentiles must equal the global bottom-256 replay
-    "q356_sketch_store" ->
-      """WITH e AS (SELECT event_id AS id, CAST(value AS DOUBLE) AS v, CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR)), 1, 13)) AS BIGINT) AS h FROM events), m AS (SELECT v FROM (SELECT v, ROW_NUMBER() OVER (ORDER BY h, id) AS rn FROM e) WHERE rn <= 256), arr AS (SELECT list_sort(list(v)) AS vals, COUNT(*) AS kk FROM m), tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_total FROM e), spine AS (SELECT * FROM (VALUES (0.5), (0.9), (0.99)) AS t(q)) SELECT q AS quantile, vals[CAST(GREATEST(1, CEIL(q * kk)) AS INTEGER)] AS est, CAST(kk AS BIGINT) AS sample_k, n_total FROM spine, arr, tot ORDER BY quantile""",
-    // the xy2d rotation loop replayed as a per-row list_reduce fold
-    "q355_hilbert_layout" ->
-      s"""SELECT o_orderkey, o_custkey, day_nr, ${hilbertSql("o_custkey", "day_nr", 12)} AS hval FROM (SELECT o_orderkey, o_custkey, CAST(date_diff('day', DATE '1992-01-01', CAST(o_orderdate AS DATE)) AS BIGINT) AS day_nr FROM orders) ORDER BY o_orderkey""",
-    // variant_get's typed extraction replays as DuckDB JSON extraction;
-    // % keeps dividend sign but k is non-negative here
-    "q173_variant_ingest" ->
-      """SELECT event_type, CAST(json_extract_string(props, '$.k') AS INTEGER) % 10 AS k_mod, COUNT(*) AS n, CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum FROM events GROUP BY 1, 2 ORDER BY event_type, k_mod""",
-    // identical salted-md5 pseudonyms on both sides keep the join keyed
-    "q174_pseudonymize" ->
-      s"""WITH ev AS (SELECT substr(md5('graft-r4:' || CAST(user_id AS VARCHAR)), 1, 16) AS pid, value FROM events), cu AS (SELECT substr(md5('graft-r4:' || CAST(c_custkey AS VARCHAR)), 1, 16) AS pid, c_mktsegment FROM customer) SELECT c_mktsegment, COUNT(*) AS n, COUNT(DISTINCT ev.pid) AS n_users, $SUMV AS total_value FROM ev JOIN cu USING (pid) GROUP BY 1 ORDER BY c_mktsegment""",
-    // same integer micro-degree coordinate derivation and planar metric;
-    // the 3x3 neighborhood replication and cell equi-join replayed
-    // literally, argmin with the same (dist2, id) tie break
-    "q175_spatial_join" ->
-      """WITH p AS (SELECT c_custkey, (c_custkey * 48271) % 120000001 - 60000000 AS plat, (c_custkey * 69621) % 360000001 - 180000000 AS plon FROM customer), st AS (SELECT s_suppkey, (s_suppkey * 7919 * 48271) % 120000001 - 60000000 AS slat, (s_suppkey * 7919 * 69621) % 360000001 - 180000000 AS slon FROM supplier), sc AS (SELECT s_suppkey, slat, slon, CAST(floor(slat / 5000000.0) AS BIGINT) + d1.o AS cr, CAST(floor(slon / 5000000.0) AS BIGINT) + d2.o AS cc FROM st, (SELECT unnest([-1, 0, 1]) AS o) d1, (SELECT unnest([-1, 0, 1]) AS o) d2), cand AS (SELECT p.c_custkey, sc.s_suppkey, (p.plat - sc.slat) * (p.plat - sc.slat) + (p.plon - sc.slon) * (p.plon - sc.slon) AS dist2 FROM p JOIN sc ON CAST(floor(p.plat / 5000000.0) AS BIGINT) = sc.cr AND CAST(floor(p.plon / 5000000.0) AS BIGINT) = sc.cc), r AS (SELECT c_custkey, s_suppkey, dist2, ROW_NUMBER() OVER (PARTITION BY c_custkey ORDER BY dist2, s_suppkey) AS rn FROM cand WHERE dist2 <= 25000000000000) SELECT c_custkey, s_suppkey, CAST(dist2 AS BIGINT) AS dist2 FROM r WHERE rn = 1 ORDER BY c_custkey""",
-    // per-term n*log2(n) rounded to 9 then DECIMAL-accumulated (order-
-    // independent), final entropy rounded to 6 — same grid both sides
-    "q176_entropy_quality" ->
-      """WITH ch AS (SELECT doc_id, unnest(string_split(text, '')) AS c FROM documents), cnt AS (SELECT doc_id, c, COUNT(*) AS n FROM ch GROUP BY 1, 2), e AS (SELECT doc_id, CAST(SUM(n) AS BIGINT) AS n_chars, COUNT(*) AS n_distinct, CAST(SUM(CAST(round(n * log2(n), 9) AS DECIMAL(28,9))) AS DOUBLE) AS s FROM cnt GROUP BY 1) SELECT doc_id, n_chars, n_distinct, round(log2(n_chars) - s / n_chars, 6) AS entropy, CASE WHEN round(log2(n_chars) - s / n_chars, 6) >= 3.5 THEN 'ok' ELSE 'low' END AS quality FROM e ORDER BY doc_id""",
-    // the bitmap merge is EXACT, so the oracle is simply the direct
-    // distinct count the merged popcount must reproduce
-    "q177_bitmap_distinct" ->
-      """SELECT event_type, COUNT(DISTINCT user_id) AS n_distinct FROM events GROUP BY 1 ORDER BY event_type""",
-    // weekly decay factor is an exact power of two: identical doubles on
-    // both engines before the round-then-decimal accumulation
-    "q178_decayed_score" ->
-      s"""WITH mx AS (SELECT MAX(CAST(ts AS DATE)) AS mx FROM events), e AS (SELECT event_type, value, datediff('day', CAST(ts AS DATE), mx) // 7 AS wk FROM events, mx) SELECT event_type, COUNT(*) AS n, CAST(SUM(CAST(round(value / CAST(1 << CAST(wk AS INTEGER) AS DOUBLE), 9) AS DECIMAL(28,9))) AS DOUBLE) AS decayed_value, $SUMV AS raw_value FROM e GROUP BY 1 ORDER BY event_type""",
-    // every content-defined cut replayed bit-for-bit: boundary where the
-    // trailing 8-char shingle's xshash has low 6 bits zero (pmod 64 == 0
-    // equals a low-bit mask for a power-of-two modulus)
-    "q179_content_chunks" ->
-      s"""$HASH_MACROS; WITH d AS (SELECT doc_id, text, length(text) AS n FROM documents WHERE length(text) >= 1), cuts AS (SELECT doc_id, text, list_sort(list_distinct(list_append(CASE WHEN n >= 8 THEN list_filter(list_transform(range(8, n + 1), cp -> CASE WHEN (xshash(substr(text, cp - 7, 8)) & 63) = 0 THEN CAST(cp AS BIGINT) END), x -> x IS NOT NULL) ELSE CAST([] AS BIGINT[]) END, CAST(n AS BIGINT)))) AS b FROM d), ch AS (SELECT doc_id, text, unnest(list_transform(range(1, len(b) + 1), k -> {'st': CASE WHEN k = 1 THEN CAST(1 AS BIGINT) ELSE b[k - 1] + 1 END, 'en': b[k]})) AS c FROM cuts), hashes AS (SELECT doc_id, c.en - c.st + 1 AS chunk_len, md5(substr(text, CAST(c.st AS INTEGER), CAST(c.en - c.st + 1 AS INTEGER))) AS chunk_hash FROM ch), shared AS (SELECT chunk_hash, COUNT(DISTINCT doc_id) AS nd FROM hashes GROUP BY 1) SELECT h.doc_id, COUNT(*) AS n_chunks, CAST(SUM(h.chunk_len) AS BIGINT) AS total_len, CAST(SUM(CASE WHEN s.nd >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_shared_chunks FROM hashes h JOIN shared s USING (chunk_hash) GROUP BY 1 ORDER BY h.doc_id""",
-    // both halves land exactly once across the two checkpointed runs ⇒
-    // the lake aggregate equals the batch answer over ALL events
-    "q180_stream_resume" ->
-      s"""SELECT strftime(ts, '%Y-%m-%d') AS date_id, COUNT(*) AS n, $SUMV AS total_value FROM events GROUP BY 1 ORDER BY date_id""",
-    // components via recursive CTE (q59's pattern) over the jw pairs;
-    // per-field survivorship replayed as one (has, trust, rid) window per
-    // field — identical to Spark's max(struct(...)) pick
-    "q183_golden_record" ->
-      """WITH RECURSIVE recs AS (SELECT c_custkey * 2 AS rid, 2 AS trust, c_name AS name, CASE WHEN c_custkey % 10 = 0 THEN NULL ELSE CAST(c_acctbal AS DECIMAL(12,2)) END AS acctbal, c_mktsegment AS segment FROM customer UNION ALL SELECT c_custkey * 2 + 1, 1, concat(substring(c_name, 1, length(c_name) - 2), substring(c_name, length(c_name), 1), substring(c_name, length(c_name) - 1, 1)), CAST(c_acctbal AS DECIMAL(12,2)) + 10, NULL FROM customer), a AS (SELECT c_custkey AS a_key, c_name AS a_name, substring(c_name, 10, 7) AS blk FROM customer), b AS (SELECT c_custkey AS b_key, concat(substring(c_name, 1, length(c_name) - 2), substring(c_name, length(c_name), 1), substring(c_name, length(c_name) - 1, 1)) AS b_name, substring(c_name, 10, 7) AS blk FROM customer), p AS (SELECT a_key * 2 AS ida, b_key * 2 + 1 AS idb FROM a JOIN b USING (blk) WHERE jaro_winkler_similarity(a_name, b_name) >= 0.98), ed AS (SELECT ida AS src, idb AS dst FROM p UNION ALL SELECT idb, ida FROM p), reach(node, label) AS (SELECT rid, rid FROM recs UNION SELECT ed.dst, r.label FROM reach r JOIN ed ON ed.src = r.node), cl AS (SELECT node AS rid, MIN(label) AS cluster_rep FROM reach GROUP BY node), j AS (SELECT cl.cluster_rep, recs.* FROM recs JOIN cl USING (rid)), pick AS (SELECT cluster_rep, COUNT(*) OVER (PARTITION BY cluster_rep) AS n_records, FIRST_VALUE(name) OVER (PARTITION BY cluster_rep ORDER BY (name IS NOT NULL) DESC, trust DESC, rid DESC) AS name, FIRST_VALUE(acctbal) OVER (PARTITION BY cluster_rep ORDER BY (acctbal IS NOT NULL) DESC, trust DESC, rid DESC) AS acctbal, FIRST_VALUE(segment) OVER (PARTITION BY cluster_rep ORDER BY (segment IS NOT NULL) DESC, trust DESC, rid DESC) AS segment FROM j) SELECT DISTINCT cluster_rep, n_records, name, CAST(acctbal AS DOUBLE) AS acctbal, segment FROM pick ORDER BY cluster_rep""",
-    // the three waves partition events by event_id mod 3; pre-evolution
-    // rows surface NULL src (grouped as 'legacy') and value maps to amount
-    "q187_schema_evolution_log" ->
-      s"""SELECT CASE event_id % 3 WHEN 0 THEN 'legacy' WHEN 1 THEN 'wave2' ELSE 'wave3' END AS src, COUNT(*) AS n, $SUMV AS total_amount FROM events GROUP BY 1 ORDER BY src""",
-    // after the overwriting transaction both members reflect the FULL
-    // fact set, so each side recomputes directly from orders/customer
-    "q186_tx_catalog" ->
-      """WITH bc AS (SELECT o_custkey, COUNT(*) AS n_orders, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS spend FROM orders GROUP BY 1), f AS (SELECT c_mktsegment, COUNT(*) AS n_cust, CAST(SUM(spend) AS DOUBLE) AS fact_spend FROM bc JOIN customer ON o_custkey = c_custkey GROUP BY 1), r AS (SELECT c_mktsegment, CAST(SUM(n_orders) AS BIGINT) AS n_orders, CAST(SUM(spend) AS DOUBLE) AS rollup_spend FROM bc JOIN customer ON o_custkey = c_custkey GROUP BY 1) SELECT c_mktsegment, f.n_cust, f.fact_spend, r.n_orders, r.rollup_spend FROM f JOIN r USING (c_mktsegment) ORDER BY c_mktsegment""",
-    // cells are additive, so the streamed, batch-boundary-split store
-    // equals the whole-corpus sketch — replayed via the xstep macro on
-    // the unsigned user id (the same mix the codegen XsMix computes)
-    "q185_stream_cms" ->
-      s"""$HASH_MACROS; WITH uc AS (SELECT user_id, COUNT(*) AS true_n FROM events GROUP BY 1), rb AS (SELECT user_id, true_n, i, CAST(xstep(tounsigned(user_id), CAST(i AS HUGEINT)) & 255 AS BIGINT) AS bucket FROM uc CROSS JOIN (SELECT unnest(range(4)) AS i) r), cells AS (SELECT i, bucket, CAST(SUM(true_n) AS BIGINT) AS cell_n FROM rb GROUP BY 1, 2), top AS (SELECT user_id, true_n FROM uc ORDER BY true_n DESC, user_id LIMIT 20) SELECT t.user_id, t.true_n, MIN(c.cell_n) AS cms_est FROM rb JOIN top t USING (user_id) JOIN cells c ON c.i = rb.i AND c.bucket = rb.bucket GROUP BY 1, 2 ORDER BY t.true_n DESC, t.user_id""",
-    // layout work never changes answers: post-optimize pruned read equals
-    // the plain two-range filter (pruning improvement asserted in spec)
-    "q184_optimize_zorder" ->
-      """WITH b AS (SELECT MAX(o_custkey) // 8 AS ct, MAX(o_orderkey) // 8 AS ot FROM orders) SELECT o_orderstatus, COUNT(*) AS n, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price FROM orders, b WHERE o_custkey BETWEEN 1 AND ct AND o_orderkey BETWEEN 1 AND ot GROUP BY 1 ORDER BY o_orderstatus""",
-    // the pruned read is a superset then exactly filtered, so the result
-    // must equal the plain two-range filter over the whole table
-    "q182_multicol_skipping" ->
-      """WITH b AS (SELECT MAX(o_custkey) // 2 AS ct, MAX(o_orderkey) // 2 AS ot FROM orders) SELECT o_orderstatus, COUNT(*) AS n, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price FROM orders, b WHERE o_custkey BETWEEN 1 AND ct AND o_orderkey BETWEEN 1 AND ot GROUP BY 1 ORDER BY o_orderstatus""",
-    // same nation→zone mapping; DuckDB resolves the conversion through
-    // its own (ICU) tz database — stable zones, so both engines agree
-    "q181_local_time" ->
-      s"""WITH cu AS (SELECT c_custkey, n_name, CASE ${NationTz.map { case (n, z) => s"WHEN n_name = '$n' THEN '$z'" }.mkString(" ")} ELSE 'UTC' END AS z FROM customer JOIN nation ON c_nationkey = n_nationkey) SELECT n_name, strftime(timezone(z, timezone('UTC', date_trunc('second', CAST(ts AS TIMESTAMP)))), '%Y-%m-%d') AS local_date, COUNT(*) AS n, $SUMV AS total_value FROM events JOIN cu ON user_id = c_custkey GROUP BY 1, 2 ORDER BY n_name, local_date""",
-    // the same hash and cosine arithmetic through the SQL-registered
-    // expressions, replayed via the portable macros; cosine sums are
-    // 6-dp-rounded then decimal-accumulated (order-independent)
-    "q172_sql_surface" ->
-      s"""$HASH_MACROS; $VEC_MACROS; WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0), t AS (SELECT lang, COUNT(*) AS n, SUM(CASE WHEN tosigned(xshash(text)) % 2 = 0 THEN 1 ELSE 0 END) AS even_hash FROM documents GROUP BY lang), v AS (SELECT label, COUNT(*) AS n, CAST(SUM(CAST(round(pcos(embedding, qv), 6) AS DECIMAL(18,6))) AS DOUBLE) AS cos_sum FROM embeddings, q GROUP BY label) SELECT * FROM (SELECT 'lang_hash' AS part, lang AS key, n, CAST(even_hash AS DOUBLE) AS metric FROM t UNION ALL SELECT 'label_cos', CAST(label AS VARCHAR), n, cos_sum FROM v) ORDER BY part, key""",
-    // per-source counter tables summed into the merged sketch, every
-    // xorshift bucket replayed in HUGEINT; the merged probe's MIN and the
-    // exact rollup replay plainly
-    "q169_cms_merge" ->
-      s"""$HASH_MACROS; WITH w AS (SELECT source, unnest(docwords(text)) AS word FROM documents), wcg AS (SELECT source, word, COUNT(*) AS n FROM w GROUP BY 1, 2), rbg AS (SELECT source, word, n, i, CAST(xstep(xshash(word), CAST(i AS HUGEINT)) & 255 AS BIGINT) AS bucket FROM wcg CROSS JOIN (SELECT unnest(range(4)) AS i) r), cellsg AS (SELECT source, i, bucket, CAST(SUM(n) AS BIGINT) AS cell_n FROM rbg GROUP BY 1, 2, 3), merged AS (SELECT i, bucket, CAST(SUM(cell_n) AS BIGINT) AS cell_n FROM cellsg GROUP BY 1, 2), wc AS (SELECT word, CAST(SUM(n) AS BIGINT) AS true_n, COUNT(DISTINCT source) AS n_groups FROM wcg GROUP BY 1), top AS (SELECT word, true_n, n_groups FROM wc ORDER BY true_n DESC, word LIMIT 20), pr AS (SELECT DISTINCT word, i, bucket FROM rbg) SELECT t.word, t.true_n, t.n_groups, MIN(m.cell_n) AS cms_est FROM pr p JOIN top t ON p.word = t.word JOIN merged m ON m.i = p.i AND m.bucket = p.bucket GROUP BY t.word, t.true_n, t.n_groups ORDER BY t.true_n DESC, t.word""",
-    // q24's bucketed candidates with BOTH directional containments;
-    // integer-over-integer divisions are exact doubles
-    "q170_containment" ->
-      s"""$HASH_MACROS; WITH hs AS ($DOC_HASHES), sh2 AS (SELECT doc_id, list_transform(range(CASE WHEN n >= 2 THEN n - 1 ELSE 1 END), p -> shmix(h[p+1], coalesce(h[p+2], ${padLit(1)}))) AS sh FROM hs), grams AS (SELECT doc_id AS id, list_sort(list_distinct(list_transform(sh, s -> tosigned(s)))) AS g FROM sh2), bk AS (SELECT id, g, g[1] AS m1, g[CASE WHEN len(g) >= 2 THEN 2 ELSE 1 END] AS m2, ROW_NUMBER() OVER (PARTITION BY g[1], g[CASE WHEN len(g) >= 2 THEN 2 ELSE 1 END] ORDER BY id) AS rn FROM grams), p AS (SELECT a.id AS id_a, b.id AS id_b, CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(a.g) AS DOUBLE) AS cont_ab, CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(b.g) AS DOUBLE) AS cont_ba FROM bk a JOIN bk b ON a.m1 = b.m1 AND a.m2 = b.m2 AND a.id < b.id WHERE a.rn <= 64 AND b.rn <= 64) SELECT id_a, id_b, cont_ab, cont_ba FROM p WHERE greatest(cont_ab, cont_ba) >= 0.5 ORDER BY greatest(cont_ab, cont_ba) DESC, id_a, id_b LIMIT 200""",
-    // every xorshift bucket assignment replayed bit-for-bit in HUGEINT
-    "q95_cms_heavy_hitters" ->
-      s"""$HASH_MACROS; WITH w AS (SELECT unnest(docwords(text)) AS word FROM documents), wc AS (SELECT word, COUNT(*) AS true_n FROM w GROUP BY word), rb AS (SELECT word, true_n, i, CAST(xstep(xshash(word), CAST(i AS HUGEINT)) & 255 AS BIGINT) AS bucket FROM wc CROSS JOIN (SELECT unnest(range(4)) AS i) r), cells AS (SELECT i, bucket, CAST(SUM(true_n) AS BIGINT) AS cell_n FROM rb GROUP BY i, bucket), top AS (SELECT word FROM wc ORDER BY true_n DESC, word LIMIT 20) SELECT p.word, p.true_n, MIN(c.cell_n) AS cms_est FROM rb p JOIN top t ON p.word = t.word JOIN cells c ON c.i = p.i AND c.bucket = p.bucket GROUP BY p.word, p.true_n ORDER BY p.true_n DESC, p.word""",
-    // BM25 with the SAME double constants and operation order as the
-    // Spark expression (interpolated, not re-typed, to avoid ulp drift);
-    // per-term scores land on a 1e-9 decimal grid before the sum
-    "q96_bm25" ->
-      s"""$HASH_MACROS; WITH w AS (SELECT doc_id, unnest(docwords(text)) AS w FROM documents), dl AS (SELECT doc_id, COUNT(*) AS dl FROM w GROUP BY doc_id), st AS (SELECT CAST(COUNT(*) AS DOUBLE) AS n, CAST(SUM(dl) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS avgdl FROM dl), q AS (SELECT doc_id, w FROM w WHERE w IN ('spark', 'join', 'scan')), tf AS (SELECT doc_id, w, COUNT(*) AS tf FROM q GROUP BY doc_id, w), df AS (SELECT w, COUNT(DISTINCT doc_id) AS df FROM q GROUP BY w), s AS (SELECT tf.doc_id, CAST((ln((((SELECT n FROM st) - CAST(df AS DOUBLE)) + 0.5) / (CAST(df AS DOUBLE) + 0.5) + 1.0) * (CAST(tf AS DOUBLE) * ${1.2 + 1.0})) / (CAST(tf AS DOUBLE) + 1.2 * ((1.0 - 0.75) + (0.75 * CAST(dl AS DOUBLE)) / (SELECT avgdl FROM st))) AS DECIMAL(18,9)) AS s FROM tf JOIN df USING (w) JOIN dl ON tf.doc_id = dl.doc_id) SELECT doc_id, round(CAST(SUM(s) AS DOUBLE), 6) AS bm25 FROM s GROUP BY doc_id ORDER BY bm25 DESC, doc_id LIMIT 100""",
-    // replays the seed + merged-day composition: unaffected partitions are
-    // the non-error daily aggregates verbatim; the max day re-aggregates
-    // state + the error-slice partials (SUM over the union = the same
-    // two-value double addition the merge performs)
-    "q97_incremental_agg" ->
-      s"""WITH state AS (SELECT strftime(ts, '%Y-%m-%d') AS date_id, event_type, COUNT(*) AS n_events, $SUMV AS total_value FROM events WHERE event_type <> 'error' GROUP BY 1, 2), mx AS (SELECT MAX(date_id) AS d FROM state), delta AS (SELECT strftime(ts, '%Y-%m-%d') AS date_id, event_type, COUNT(*) AS n_events, $SUMV AS total_value FROM events WHERE event_type = 'error' AND strftime(ts, '%Y-%m-%d') = (SELECT d FROM mx) GROUP BY 1, 2), merged AS (SELECT date_id, event_type, CAST(SUM(n_events) AS BIGINT) AS n_events, CAST(SUM(total_value) AS DOUBLE) AS total_value FROM (SELECT * FROM state WHERE date_id = (SELECT d FROM mx) UNION ALL SELECT * FROM delta) GROUP BY 1, 2) SELECT date_id, event_type, n_events, total_value FROM (SELECT date_id, event_type, n_events, total_value FROM state WHERE date_id <> (SELECT d FROM mx) UNION ALL SELECT date_id, event_type, n_events, total_value FROM merged) ORDER BY date_id, event_type""",
-    // as-of v2 reconstruction: +100 upserts win for keys ≡ 0 (mod 10),
-    // deletes drop keys ≡ 0 (mod 7) (minus the upsert overlap), v3 is
-    // invisible; `version` records which change set each row came from
-    "q98_time_travel" ->
-      """SELECT c_custkey, c_name, CASE WHEN c_custkey % 10 = 0 THEN c_acctbal + 100.0 ELSE c_acctbal END AS c_acctbal, CAST(CASE WHEN c_custkey % 10 = 0 THEN 2 ELSE 1 END AS BIGINT) AS version FROM customer WHERE c_custkey <= 500 AND NOT (c_custkey % 10 <> 0 AND c_custkey % 7 = 0) ORDER BY c_custkey""",
-    // correlated trailing-interval COUNT(DISTINCT) — the declarative
-    // statement of what the bounded-explode plan computes
-    "q99_trailing_distinct" ->
-      """WITH pairs AS (SELECT DISTINCT epoch_ns(ts)//1000000000//3600 AS hour_id, user_id FROM events), hours AS (SELECT DISTINCT hour_id FROM pairs) SELECT h.hour_id, CAST((SELECT COUNT(DISTINCT p.user_id) FROM pairs p WHERE p.hour_id BETWEEN h.hour_id - 23 AND h.hour_id) AS BIGINT) AS n_distinct FROM hours h ORDER BY hour_id""",
-    // three Lloyd-style PageRank iterations unrolled; contributions hit the
-    // same 1e-9 decimal grid before each per-destination sum, and the
-    // (1 - damping) teleport constant is interpolated from the identical
-    // Scala double so both engines add bit-equal values
-    "q100_pagerank" ->
-      s"""WITH pairs AS (SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp FROM lineitem JOIN orders ON l_orderkey = o_orderkey), edges AS (SELECT cust AS src, -supp AS dst FROM pairs UNION ALL SELECT -supp AS src, cust AS dst FROM pairs), deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY src), pr0 AS (SELECT node, deg, CAST(1.0 AS DOUBLE) AS pr FROM deg), it1 AS (SELECT e.dst AS node, SUM(CAST(p.pr / p.deg * ${0.85} AS DECIMAL(28,9))) AS c FROM edges e JOIN pr0 p ON e.src = p.node GROUP BY e.dst), pr1 AS (SELECT d.node, d.deg, ${1.0 - 0.85} + COALESCE(CAST(i.c AS DOUBLE), 0.0) AS pr FROM deg d LEFT JOIN it1 i ON d.node = i.node), it2 AS (SELECT e.dst AS node, SUM(CAST(p.pr / p.deg * ${0.85} AS DECIMAL(28,9))) AS c FROM edges e JOIN pr1 p ON e.src = p.node GROUP BY e.dst), pr2 AS (SELECT d.node, d.deg, ${1.0 - 0.85} + COALESCE(CAST(i.c AS DOUBLE), 0.0) AS pr FROM deg d LEFT JOIN it2 i ON d.node = i.node), it3 AS (SELECT e.dst AS node, SUM(CAST(p.pr / p.deg * ${0.85} AS DECIMAL(28,9))) AS c FROM edges e JOIN pr2 p ON e.src = p.node GROUP BY e.dst), pr3 AS (SELECT d.node, d.deg, ${1.0 - 0.85} + COALESCE(CAST(i.c AS DOUBLE), 0.0) AS pr FROM deg d LEFT JOIN it3 i ON d.node = i.node) SELECT node, round(pr, 6) AS pr FROM pr3 ORDER BY pr DESC, node LIMIT 100""",
-    "q101_profile" ->
-      """SELECT * FROM (SELECT 'c_acctbal' AS col_name, COUNT(*) AS n_rows, COUNT(c_acctbal) AS n_nonnull, COUNT(DISTINCT c_acctbal) AS n_distinct, CAST(MIN(c_acctbal) AS DOUBLE) AS min_num, CAST(MAX(c_acctbal) AS DOUBLE) AS max_num FROM customer UNION ALL SELECT 'c_custkey', COUNT(*), COUNT(c_custkey), COUNT(DISTINCT c_custkey), CAST(MIN(c_custkey) AS DOUBLE), CAST(MAX(c_custkey) AS DOUBLE) FROM customer UNION ALL SELECT 'c_name', COUNT(*), COUNT(c_name), COUNT(DISTINCT c_name), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE) FROM customer UNION ALL SELECT 'c_nationkey', COUNT(*), COUNT(c_nationkey), COUNT(DISTINCT c_nationkey), CAST(MIN(c_nationkey) AS DOUBLE), CAST(MAX(c_nationkey) AS DOUBLE) FROM customer UNION ALL SELECT 'c_mktsegment', COUNT(*), COUNT(c_mktsegment), COUNT(DISTINCT c_mktsegment), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE) FROM customer) ORDER BY col_name""",
-    "q102_grouping_sets" ->
-      s"""SELECT coalesce(l_returnflag, 'ALL') AS return_flag, coalesce(l_linestatus, 'ALL') AS line_status, CAST(GROUPING(l_returnflag) * 2 + GROUPING(l_linestatus) AS BIGINT) AS gid, COUNT(*) AS n, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty FROM lineitem GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), (l_linestatus), ()) ORDER BY gid, return_flag, line_status""",
-    // v2→v3 delta: deleted-at-v2 keys come back as inserts, every other
-    // key updates unless its v2 balance already equalled v3's zero
-    "q103_snapshot_diff" ->
-      """WITH base AS (SELECT c_custkey, c_acctbal FROM customer WHERE c_custkey <= 500), v2 AS (SELECT c_custkey, CASE WHEN c_custkey % 10 = 0 THEN c_acctbal + 100.0 ELSE c_acctbal END AS bal FROM base WHERE NOT (c_custkey % 10 <> 0 AND c_custkey % 7 = 0)) SELECT b.c_custkey, CASE WHEN v2.c_custkey IS NULL THEN 'I' ELSE 'U' END AS change, v2.bal AS old_acctbal, CAST(0.0 AS DOUBLE) AS new_acctbal FROM base b LEFT JOIN v2 ON b.c_custkey = v2.c_custkey WHERE v2.c_custkey IS NULL OR v2.bal <> 0.0 ORDER BY b.c_custkey""",
-    // replays the 0..255 quantization (identical IEEE ops on identical
-    // operands) then ranks by pcos over the quantized vectors — integer-
-    // exact accumulations make the cosine doubles bit-equal cross-engine
-    "q104_quantized_ann" ->
-      s"""$VEC_MACROS; WITH b AS (SELECT CAST(MIN(u) AS DOUBLE) AS mn, CAST(MAX(u) AS DOUBLE) AS mx FROM (SELECT unnest(embedding) AS u FROM embeddings)), qz AS (SELECT vec_id, list_transform(embedding, v -> CAST(CAST(least(greatest(round((CAST(v AS DOUBLE) - mn) * (255.0 / (mx - mn))), 0.0), 255.0) AS INT) AS FLOAT)) AS qv FROM embeddings, b), q AS (SELECT vec_id AS qid, qv AS qvec FROM qz WHERE vec_id < 10), s AS (SELECT q.qid, e.vec_id AS nid, pcos(q.qvec, e.qv) AS cos FROM q CROSS JOIN qz e WHERE e.vec_id <> q.qid), r AS (SELECT qid, nid, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY cos DESC, nid) AS rnk FROM s) SELECT qid, rnk, nid FROM r WHERE rnk <= 10 ORDER BY qid, rnk""",
-    "q105_quality_rules" ->
-      """SELECT rule_id, n_violations, n_rows, round(1.0 - CAST(n_violations AS DOUBLE) / n_rows, 6) AS pass_ratio FROM (SELECT 'price_positive' AS rule_id, CAST(SUM(CASE WHEN o_totalprice <= 0.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_violations, COUNT(*) AS n_rows FROM orders UNION ALL SELECT 'status_domain', CAST(SUM(CASE WHEN o_orderstatus NOT IN ('O', 'F', 'P') THEN 1 ELSE 0 END) AS BIGINT), COUNT(*) FROM orders UNION ALL SELECT 'date_present', CAST(SUM(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END) AS BIGINT), COUNT(*) FROM orders UNION ALL SELECT 'priority_format', CAST(SUM(CASE WHEN NOT regexp_matches(o_orderpriority, '^[1-5]-') THEN 1 ELSE 0 END) AS BIGINT), COUNT(*) FROM orders) ORDER BY rule_id""",
-    // the compacted v4 base IS the zeroed v3 snapshot with version = 4
-    "q106_compact_base" ->
-      """SELECT c_custkey, c_name, CAST(0.0 AS DOUBLE) AS c_acctbal, CAST(4 AS BIGINT) AS version FROM customer WHERE c_custkey <= 500 ORDER BY c_custkey""",
-    // batch gap-split sessionization — what the streaming custom-state
-    // operator must converge to once the sentinel flushes all state
-    "q107_stream_custom_state" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), s AS (SELECT user_id, event_id, sec, CASE WHEN lag(sec) OVER w IS NULL OR sec - lag(sec) OVER w > 1800 THEN 1 ELSE 0 END AS new_s FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)), t AS (SELECT user_id, sec, CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY sec, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id FROM s) SELECT user_id, MIN(sec) AS start_sec, MAX(sec) AS end_sec, COUNT(*) AS n_events FROM t GROUP BY user_id, session_id ORDER BY user_id, start_sec""",
-    // scale-2 bases multiplied IN decimal (exact both engines), division
-    // in double, 1e-6 output grid absorbs the wide-decimal cast ulp
-    "q108_custom_udaf" ->
-      """SELECT l_returnflag, round(CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) / CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE), 6) AS wavg_price, COUNT(*) AS n FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    // densities from integer counts with the same fixed-order double ops;
-    // psi terms computed from the UNROUNDED densities like the Spark side
-    "q109_psi_drift" -> psiDriftOracleSql,
-    // the streaming PSI store's batch-split censuses ADD, so the drained
-    // readout replays the one-pass q109 oracle verbatim
-    "q480_stream_psi" -> psiDriftOracleSql,
-    "q110_hierarchy_closure" ->
-      """WITH RECURSIVE r AS (SELECT c_custkey AS id, c_custkey AS cur, CAST(0 AS BIGINT) AS depth FROM customer UNION ALL SELECT id, cur // 10, depth + 1 FROM r WHERE cur >= 10) SELECT id, cur AS root, depth FROM r WHERE cur < 10 ORDER BY id""",
-    // compaction must be row-invisible: the read-back equals the plain
-    // daily aggregate no matter how the files were laid out
-    "q111_compact_small_files" ->
-      s"""SELECT strftime(ts, '%Y-%m-%d') AS date_id, event_type, COUNT(*) AS n_events, $SUMV AS total_value FROM events GROUP BY 1, 2 ORDER BY date_id, event_type""",
-    // q112_approx_quantile: rows-only by design (GK sketch internals are
-    // engine-specific); SketchesSpec bounds the rank error vs exact
-    // files were staged byte-for-byte from nation names, so every md5 and
-    // length recomputes from the table
-    "q114_binary_ingest" ->
-      """SELECT n_name || '.bin' AS file_name, CAST(octet_length(encode(n_name)) AS BIGINT) AS length, md5(n_name) AS content_md5 FROM nation ORDER BY file_name""",
-    // the list lambdas mirror each HOF; the fold seeds 0.0 and adds left
-    // to right exactly like Spark's aggregate()
-    "q115_array_hof" ->
-      """WITH l AS (SELECT l_orderkey, list(l_extendedprice ORDER BY l_linenumber) AS prices FROM lineitem GROUP BY l_orderkey) SELECT l_orderkey, CAST(len(prices) AS BIGINT) AS n_items, CAST(len(list_filter(prices, p -> p > 3000.0)) AS BIGINT) AS n_big, round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), prices), (a, b) -> a + b), 6) AS total, len(list_filter(prices, p -> p > 50000.0)) > 0 AS has_jumbo FROM l ORDER BY l_orderkey""",
-    // v2 = history + the latest day's non-error slice; latest = the full
-    // overwrite — both replayed straight from events
-    "q117_txlog_lake" ->
-      s"""WITH daily AS (SELECT strftime(ts, '%Y-%m-%d') AS date_id, event_type, COUNT(*) AS n_events, $SUMV AS total_value FROM events GROUP BY 1, 2), mx AS (SELECT MAX(date_id) AS d FROM daily) SELECT * FROM (SELECT 'v2' AS snap, date_id, event_type, n_events, total_value FROM daily WHERE date_id <> (SELECT d FROM mx) OR event_type <> 'error' UNION ALL SELECT 'latest', date_id, event_type, n_events, total_value FROM daily) ORDER BY snap, date_id, event_type""",
-    "q118_incremental_dedup" ->
-      """WITH fp AS (SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS text_hash FROM documents), hist AS (SELECT DISTINCT text_hash FROM fp WHERE doc_id <= 250), inc AS (SELECT MIN(doc_id) AS doc_id, text_hash FROM fp WHERE doc_id > 250 GROUP BY text_hash) SELECT doc_id, text_hash FROM inc WHERE text_hash NOT IN (SELECT text_hash FROM hist) ORDER BY doc_id""",
-    // q119_hll_rollup: rows-only by design (HLL sketch internals are
-    // engine-specific); SketchesSpec bounds the merged estimate vs exact
-    "q120_erasure_delete" ->
-      s"""SELECT event_type, COUNT(*) AS n, $SUMV AS total_value, COUNT(DISTINCT user_id) AS n_users FROM events WHERE user_id % 7 <> 0 GROUP BY event_type ORDER BY event_type""",
-    "q121_exactly_once_sink" ->
-      s"""SELECT strftime(ts, '%Y-%m-%d') AS date_id, event_type, COUNT(*) AS n, $SUMV AS total_value FROM events GROUP BY 1, 2 ORDER BY date_id, event_type""",
-    "q133_xml_source" ->
-      """SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name, CAST(n_regionkey AS BIGINT) AS n_regionkey FROM nation ORDER BY n_nationkey""",
-    // the two-phase distributed prefix sum must equal the plain global
-    // running sum; all arithmetic is integer-exact
-    "q138_seq_packing" ->
-      """WITH t AS (SELECT doc_id, CAST(array_length(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS BIGINT) AS tokens FROM documents), o AS (SELECT doc_id, tokens, SUM(tokens) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - tokens AS off FROM t WHERE tokens >= 1) SELECT doc_id, tokens, CAST(off // 512 AS BIGINT) AS pack_id, CAST(off % 512 AS BIGINT) AS pack_offset, CAST((off + tokens - 1) // 512 - off // 512 + 1 AS BIGINT) AS n_spans FROM o ORDER BY doc_id""",
-    // identical 3-gram construction (1-based inclusive list slices) and
-    // count arithmetic
-    "q139_repetition" ->
-      """WITH w AS (SELECT doc_id, string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS w FROM documents), g AS (SELECT doc_id, unnest(list_transform(range(1, len(w) - 1), i -> array_to_string(w[i:i+2], ' '))) AS gram FROM w WHERE len(w) >= 3), c AS (SELECT doc_id, gram, COUNT(*) AS cnt FROM g GROUP BY 1, 2) SELECT doc_id, CAST(SUM(cnt) AS BIGINT) AS n_grams, CAST(MAX(cnt) AS BIGINT) AS max_rep, round(CAST(MAX(cnt) AS DOUBLE) / CAST(SUM(cnt) AS DOUBLE), 6) AS rep_ratio FROM c GROUP BY doc_id ORDER BY doc_id""",
-    // same synthesized text, same lookaround-free patterns (Java regex and
-    // RE2 agree on this subset); DuckDB regexp_replace needs the g flag
-    "q140_pii_redact" ->
-      """WITH t AS (SELECT c_custkey, concat(c_name, ' <user', CAST(c_custkey AS VARCHAR), '@example.com> bal ', CAST(CAST(c_acctbal AS DECIMAL(12,2)) AS VARCHAR)) AS text FROM customer), r AS (SELECT c_custkey, CAST(len(regexp_extract_all(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails, regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g') AS ne FROM t) SELECT c_custkey, n_emails, CAST(len(regexp_extract_all(ne, '[0-9]{3,}')) AS BIGINT) AS n_digit_runs, md5(regexp_replace(ne, '[0-9]{3,}', '<NUM>', 'g')) AS red_md5 FROM r ORDER BY c_custkey""",
-    // identical 4-gram shingling; DISTINCT per (doc, shingle) both sides;
-    // benchmark membership via left join on the shingle text
-    "q141_contamination" ->
-      """WITH w AS (SELECT doc_id, string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS w FROM documents), g0 AS (SELECT doc_id, doc_id % 97 = 0 AS is_bench, unnest(list_transform(range(1, len(w) - 2), i -> array_to_string(w[i:i+3], ' '))) AS gram FROM w WHERE len(w) >= 4), g AS (SELECT DISTINCT doc_id, is_bench, gram FROM g0), b AS (SELECT DISTINCT gram FROM g WHERE is_bench), c AS (SELECT g.doc_id, COUNT(*) AS n_shingles, CAST(SUM(CASE WHEN b.gram IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits FROM g LEFT JOIN b ON g.gram = b.gram WHERE NOT g.is_bench GROUP BY g.doc_id) SELECT doc_id, n_shingles, n_hits, round(CAST(n_hits AS DOUBLE) / CAST(n_shingles AS DOUBLE), 6) AS contamination FROM c ORDER BY doc_id""",
-    // branch isolation in both directions: main sees id%4 in 0,1,2 and
-    // the branch sees 0,1,3 — any leakage changes a count and the hash
-    "q149_txlake_branch" ->
-      """WITH ev AS (SELECT event_id, event_type, CAST(value AS DECIMAL(18,2)) AS value FROM events) SELECT * FROM (SELECT 'main' AS side, event_type, COUNT(*) AS n, CAST(SUM(value) AS DOUBLE) AS total FROM ev WHERE event_id % 4 IN (0, 1, 2) GROUP BY 2 UNION ALL SELECT 'exp', event_type, COUNT(*), CAST(SUM(value) AS DOUBLE) FROM ev WHERE event_id % 4 IN (0, 1, 3) GROUP BY 2) ORDER BY side, event_type""",
-    // same fingerprint (q32's), same md5 split recipe (q47/q76's)
-    "q152_leakage_split" ->
-      """WITH g AS (SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp FROM documents), k AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY fp) AS gkey FROM g), b AS (SELECT doc_id, gkey, CAST(concat('0x', substr(md5(CAST(gkey AS VARCHAR)), 1, 8)) AS BIGINT) % 100 AS pct FROM k) SELECT doc_id, gkey, CASE WHEN pct < 80 THEN 'train' WHEN pct < 90 THEN 'val' ELSE 'test' END AS split FROM b ORDER BY doc_id""",
-    // net per-commit changes replayed from the staged commit recipe:
-    // v2 appended the even orderkeys, v3 erased custkey % 10 = 0 (the
-    // rewrite's carried-over survivors cancel in the feed's EXCEPT ALL
-    // and must not appear on either side)
-    "q153_txlake_cdf" ->
-      """SELECT * FROM (SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus, 'insert' AS _change_type, CAST(2 AS BIGINT) AS _commit_version FROM orders WHERE o_orderkey % 2 = 0 UNION ALL SELECT o_orderkey, o_custkey, o_totalprice, o_orderstatus, 'delete', 3 FROM orders WHERE o_custkey % 10 = 0) ORDER BY _commit_version, _change_type, o_orderkey""",
-    // q84's replayed MinHash machinery, split corpus/batch: the corpus
-    // side (id % 7 <> 0) is bucket-capped AFTER the split — the same rank
-    // rule the persisted index applies at build time; the probing batch
-    // (id % 7 = 0) is uncapped
-    "q154_lsh_index" ->
-      s"""$HASH_MACROS; WITH hs AS ($DOC_HASHES), shingled AS (SELECT doc_id, list_transform(range(CASE WHEN n >= 3 THEN n - 2 ELSE 1 END), p -> shmix(shmix(h[p+1], coalesce(h[p+2], ${padLit(1)})), coalesce(h[p+3], ${padLit(2)}))) AS sh FROM hs), sigs AS (SELECT doc_id AS id, $sigSql AS sig FROM shingled), bands AS (SELECT id, sig, unnest(list_zip([${(0 until 8).map(bandSql).mkString(", ")}], [0,1,2,3,4,5,6,7])) AS z FROM sigs), wb AS (SELECT id, sig, z[2] AS band_idx, z[1] AS band_hash, ROW_NUMBER() OVER (PARTITION BY z[2], z[1] ORDER BY id) AS rn FROM bands WHERE id % 7 <> 0), qb AS (SELECT id, sig, z[2] AS band_idx, z[1] AS band_hash FROM bands WHERE id % 7 = 0), p AS (SELECT DISTINCT q.id AS batch_id, c.id AS corpus_id, CAST(len(list_filter(range(32), i -> q.sig[i+1] = c.sig[i+1])) AS DOUBLE) / 32.0 AS est_jaccard FROM qb q JOIN wb c ON q.band_idx = c.band_idx AND q.band_hash = c.band_hash WHERE c.rn <= 64) SELECT batch_id, corpus_id, est_jaccard FROM p WHERE est_jaccard >= 0.3 ORDER BY batch_id, corpus_id""",
-    // consecutive steps via the same (sec, event_id) order as q71; the
-    // window total runs over the |states|² aggregate; p is one exact-int
-    // division, bit-identical across engines
-    "q222_markov_transitions" ->
-      """WITH e AS (SELECT user_id, event_type, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec, event_id FROM events), l AS (SELECT event_type AS from_state, lead(event_type) OVER (PARTITION BY user_id ORDER BY sec, event_id) AS to_state FROM e), c AS (SELECT from_state, to_state, COUNT(*) AS n FROM l WHERE to_state IS NOT NULL GROUP BY 1, 2) SELECT from_state, to_state, n, CAST(SUM(n) OVER (PARTITION BY from_state) AS BIGINT) AS n_from, CAST(n AS DOUBLE) / CAST(CAST(SUM(n) OVER (PARTITION BY from_state) AS BIGINT) AS DOUBLE) AS p FROM c ORDER BY from_state, to_state""",
-    // interval-merge sessionization: new session exactly when the start
-    // exceeds the running max end of all earlier intervals in the key
-    "q223_dynamic_sessions" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec, CASE WHEN event_type IN ('purchase', 'signup') THEN 3600 ELSE 1800 END AS gap FROM events), m AS (SELECT user_id, sec, sec + gap AS fin, MAX(sec + gap) OVER (PARTITION BY user_id ORDER BY sec, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_max_end, event_id FROM e), f AS (SELECT user_id, sec, fin, event_id, CASE WHEN prev_max_end IS NULL OR sec > prev_max_end THEN 1 ELSE 0 END AS is_new FROM m), g AS (SELECT user_id, sec, fin, CAST(SUM(is_new) OVER (PARTITION BY user_id ORDER BY sec, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_idx FROM f) SELECT user_id, session_idx, COUNT(*) AS n_events, MIN(sec) AS start_sec, MAX(fin) AS end_sec FROM g GROUP BY 1, 2 ORDER BY user_id, session_idx""",
-    "q224_kcore" -> kcoreOracleSql,
-    // fixed 8-round peeling unroll; exact past the fixpoint
-    "q413_ktruss" -> ktrussOracleSql,
-    // 8-round integer geometric series, bit-identical recurrence
-    "q415_absorbing_funnel" -> absorbingOracleSql,
-    // exact integer ceiling ranks against the pooled cumulative census
-    "q416_quantile_norm" ->
-      """WITH r AS (SELECT o_orderpriority AS pri, o_orderkey, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM orders), s AS (SELECT pri, o_orderkey, cents, CAST(ROW_NUMBER() OVER (PARTITION BY pri ORDER BY cents, o_orderkey) AS BIGINT) AS rn, CAST(COUNT(*) OVER (PARTITION BY pri) AS BIGINT) AS n_g, CAST(COUNT(*) OVER () AS BIGINT) AS n FROM r), f AS (SELECT pri, o_orderkey, cents, (rn * n + n_g - 1) // n_g AS p FROM s), c AS (SELECT cents AS v_norm, CAST(COUNT(*) AS BIGINT) AS cnt FROM r GROUP BY 1), cc AS (SELECT v_norm, cnt, CAST(SUM(cnt) OVER (ORDER BY v_norm) AS BIGINT) AS cum FROM c) SELECT f.o_orderkey, f.pri, f.cents, cc.v_norm FROM f JOIN cc ON f.p > cc.cum - cc.cnt AND f.p <= cc.cum ORDER BY f.o_orderkey""",
-    // 10-round synchronized deferred-acceptance unroll
-    "q427_stable_match" -> stableMatchOracleSql,
-    // integer time-fraction cutoffs; one conditional pass per look;
-    // pinned OBF boundary literals; stop decision broadcast
-    "q472_group_sequential" ->
-      """WITH e AS (SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v, event_type = 'view' AS isa, epoch_ns(ts) // 1000000000 AS sec FROM events WHERE event_type IN ('view', 'click')), bb AS (SELECT MIN(sec) AS lo, MAX(sec) AS hi FROM e), lk AS (SELECT * FROM (VALUES (CAST(1 AS BIGINT), 3.471), (CAST(2 AS BIGINT), 2.454), (CAST(3 AS BIGINT), 2.004)) AS t(look, boundary)), cu AS (SELECT lk.look, lk.boundary, bb.lo + (bb.hi - bb.lo) * lk.look // 3 AS cut FROM lk, bb), m AS (SELECT cu.look, cu.boundary, CAST(SUM(CASE WHEN e.sec <= cu.cut AND isa THEN 1 ELSE 0 END) AS BIGINT) AS na, CAST(SUM(CASE WHEN e.sec <= cu.cut AND NOT isa THEN 1 ELSE 0 END) AS BIGINT) AS nb, SUM(CASE WHEN e.sec <= cu.cut AND isa THEN CAST(v AS DECIMAL(38,0)) ELSE 0 END) AS sa, SUM(CASE WHEN e.sec <= cu.cut AND NOT isa THEN CAST(v AS DECIMAL(38,0)) ELSE 0 END) AS sb, SUM(CASE WHEN e.sec <= cu.cut AND isa THEN CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0)) ELSE 0 END) AS saa, SUM(CASE WHEN e.sec <= cu.cut AND NOT isa THEN CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0)) ELSE 0 END) AS sbb FROM cu, e GROUP BY 1, 2), zz AS (SELECT look, boundary, na, nb, round((CAST(sa AS DOUBLE) / CAST(na AS DOUBLE) - CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE)) / sqrt(((CAST(na AS DOUBLE) * CAST(saa AS DOUBLE) - CAST(sa AS DOUBLE) * CAST(sa AS DOUBLE)) / (CAST(na AS DOUBLE) * (CAST(na AS DOUBLE) - 1.0))) / CAST(na AS DOUBLE) + ((CAST(nb AS DOUBLE) * CAST(sbb AS DOUBLE) - CAST(sb AS DOUBLE) * CAST(sb AS DOUBLE)) / (CAST(nb AS DOUBLE) * (CAST(nb AS DOUBLE) - 1.0))) / CAST(nb AS DOUBLE)), 6) AS z FROM m), st AS (SELECT *, abs(z) > boundary AS crossed FROM zz) SELECT look, na AS n_a, nb AS n_b, boundary, z, crossed, MIN(CASE WHEN crossed THEN look END) OVER () AS stop_at_look FROM st ORDER BY look""",
-    // exact + LSH + per-probe IVF retrievals all replayed; recall is
-    // exact hit counts over the shared ground truth
-    "q474_recall_sweep" -> recallSweepOracleSql,
-    // 8 unrolled census → argmax → greedy-replace rounds
-    "q475_bpe_train" -> bpeTrainOracleSql(8),
-    // exact DECIMAL(38,0) power sums; pinned central-moment finish
-    // (m2·sqrt(m2), not pow — libm pow is not cross-engine)
-    "q476_skew_kurtosis" ->
-      """WITH e AS (SELECT o_orderpriority AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM orders), a AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(v AS DECIMAL(38,0))) AS s1, SUM(CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))) AS s2, SUM(CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))) AS s3, SUM(CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))) AS s4 FROM e GROUP BY g HAVING COUNT(*) >= 2), f AS (SELECT g, n, CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS mean, CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE) AS r2, CAST(s3 AS DOUBLE) / CAST(n AS DOUBLE) AS r3, CAST(s4 AS DOUBLE) / CAST(n AS DOUBLE) AS r4 FROM a), m AS (SELECT g, n, mean, r2 - mean * mean AS m2, r3 - 3.0 * mean * r2 + 2.0 * mean * mean * mean AS m3, r4 - 4.0 * mean * r3 + 6.0 * mean * mean * r2 - 3.0 * mean * mean * mean * mean AS m4 FROM f) SELECT g, n, round(mean, 6) AS mean, round(CASE WHEN m2 > 0.0 THEN m3 / (m2 * sqrt(m2)) END, 6) AS skew_g1, round(CASE WHEN m2 > 0.0 THEN m4 / (m2 * m2) - 3.0 END, 6) AS kurt_g2 FROM m ORDER BY g""",
-    // per-group pinned S²; grid-summed cross-group reductions; only
-    // ln S²_p and T leave (the q458 magnitude rule)
-    "q477_bartlett" ->
-      """WITH e AS (SELECT o_orderpriority AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM orders), a AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(v AS DECIMAL(38,0))) AS s1, SUM(CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))) AS s2 FROM e GROUP BY g HAVING COUNT(*) >= 2), p AS (SELECT n, (CAST(n AS DOUBLE) * CAST(s2 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)) / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) AS s2i FROM a), ag AS (SELECT CAST(COUNT(*) AS BIGINT) AS k, CAST(SUM(n) AS BIGINT) AS n_total, SUM(CAST(round((CAST(n AS DOUBLE) - 1.0) * s2i, 9) AS DECIMAL(38,9))) AS spnum, SUM(CAST(round((CAST(n AS DOUBLE) - 1.0) * ln(s2i), 9) AS DECIMAL(28,9))) AS sumln, SUM(CAST(round(1.0 / (CAST(n AS DOUBLE) - 1.0), 9) AS DECIMAL(28,9))) AS suminv FROM p), z AS (SELECT k, n_total, ln(CAST(spnum AS DOUBLE) / (CAST(n_total AS DOUBLE) - CAST(k AS DOUBLE))) AS lnsp, 1.0 + (CAST(suminv AS DOUBLE) - 1.0 / (CAST(n_total AS DOUBLE) - CAST(k AS DOUBLE))) / (3.0 * (CAST(k AS DOUBLE) - 1.0)) AS corr, (CAST(n_total AS DOUBLE) - CAST(k AS DOUBLE)) AS nmk, CAST(sumln AS DOUBLE) AS sl FROM ag) SELECT k, n_total, round(lnsp, 6) AS ln_sp2, round(CASE WHEN k >= 2 THEN (nmk * lnsp - sl) / corr END, 6) AS t_bartlett, k - 1 AS dof FROM z""",
-    // row-local array-expression signals; pass compares the ROUNDED
-    // columns on both engines; pinned thresholds + stopword list
-    "q482_gopher_rules" ->
-      s"""$HASH_MACROS; WITH w AS (SELECT doc_id, text, docwords(text) AS ws FROM documents), m AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_words, round(CAST(list_sum(list_transform(ws, w2 -> CAST(length(w2) AS BIGINT))) AS DOUBLE) / CAST(len(ws) AS DOUBLE), 6) AS mean_word_len, round(CAST(len(list_filter(ws, w3 -> regexp_matches(w3, '[a-z]'))) AS DOUBLE) / CAST(len(ws) AS DOUBLE), 6) AS alpha_word_share, CAST(len(regexp_extract_all(text, '#')) + len(regexp_extract_all(text, '\\.\\.\\.')) AS BIGINT) AS n_symbols, round(CAST(len(regexp_extract_all(text, '#')) + len(regexp_extract_all(text, '\\.\\.\\.')) AS DOUBLE) / CAST(len(ws) AS DOUBLE), 6) AS symbol_ratio, CAST(len(list_filter(['the','be','to','of','and','that','have','with'], s2 -> list_contains(ws, s2))) AS BIGINT) AS stop_hits FROM w) SELECT *, n_words >= 10 AND mean_word_len >= 3.0 AND mean_word_len <= 10.0 AND alpha_word_share >= 0.8 AND symbol_ratio <= 0.1 AND stop_hits >= 2 AS pass FROM m ORDER BY doc_id""",
-    // one shared recursive walk carrying the source id; BFS distance =
-    // MIN over the walk; 1/d terms on the grid
-    "q483_harmonic_centrality" ->
-      """WITH RECURSIVE pairs AS (SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp FROM lineitem JOIN orders ON l_orderkey = o_orderkey), ed AS (SELECT cust AS src, -supp AS dst FROM pairs UNION ALL SELECT -supp AS src, cust AS dst FROM pairs), srcs AS (SELECT c_custkey AS s FROM customer WHERE c_custkey <= 8), walk(s, node, hops) AS (SELECT s, s, 0 FROM srcs UNION SELECT w.s, ed.dst, w.hops + 1 FROM walk w JOIN ed ON ed.src = w.node WHERE w.hops < 4), mh AS (SELECT s, node, CAST(MIN(hops) AS BIGINT) AS hops FROM walk GROUP BY 1, 2) SELECT s AS src, COUNT(*) AS n_reached, MAX(hops) AS max_hop, round(CAST(SUM(CAST(round(1.0 / CAST(hops AS DOUBLE), 9) AS DECIMAL(18,9))) AS DOUBLE), 6) AS harmonic FROM mh WHERE hops >= 1 GROUP BY s ORDER BY src""",
-    // exact-integer OLS sums; SES fold replayed in list_reduce order
-    "q484_theta_forecast" ->
-      """WITH h AS (SELECT user_id, epoch_ns(ts)//1000000000//3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS v FROM events GROUP BY 1, 2), r AS (SELECT user_id, hid, v, CAST(ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY hid) AS BIGINT) AS t, CAST(COUNT(*) OVER (PARTITION BY user_id) AS BIGINT) AS n FROM h), s AS (SELECT user_id, MAX(n) AS n, CAST(SUM(t) AS BIGINT) AS st, CAST(SUM(t * t) AS BIGINT) AS stt, SUM(CAST(v AS DECIMAL(38,0))) AS sx, SUM(CAST(t AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))) AS stx FROM r GROUP BY user_id HAVING MAX(n) >= 3), f AS (SELECT user_id, n, (CAST(n AS DOUBLE) * CAST(stx AS DOUBLE) - CAST(st AS DOUBLE) * CAST(sx AS DOUBLE)) / (CAST(n AS DOUBLE) * CAST(stt AS DOUBLE) - CAST(st AS DOUBLE) * CAST(st AS DOUBLE)) AS b, st, sx FROM s), f2 AS (SELECT user_id, n, b, (CAST(sx AS DOUBLE) - b * CAST(st AS DOUBLE)) / CAST(n AS DOUBLE) AS a FROM f), l AS (SELECT r.user_id, f2.n, f2.a, f2.b, list(2.0 * CAST(r.v AS DOUBLE) - (f2.a + f2.b * CAST(r.t AS DOUBLE)) ORDER BY r.t) AS ys FROM r JOIN f2 ON r.user_id = f2.user_id GROUP BY 1, 2, 3, 4), z AS (SELECT user_id, n, a, b, list_reduce(ys, (a9, y9) -> 0.5 * y9 + 0.5 * a9) AS lvl FROM l) SELECT user_id, n, round(a, 6) AS a, round(b, 6) AS b, round(lvl, 6) AS level, round(0.5 * lvl + 0.5 * (a + b * (CAST(n AS DOUBLE) + 1.0)), 6) AS forecast FROM z ORDER BY user_id""",
-    // hashed-unigram bucket censuses; ln over exact integer
-    // cross-products; count×grid-decimal per-doc sums
-    "q479_dsir_weights" ->
-      """WITH w0 AS (SELECT doc_id, lang = 'en' AS tgt, unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w FROM documents), w2 AS (SELECT doc_id, tgt, CAST(concat('0x', substr(md5(w), 1, 13)) AS BIGINT) % 64 AS b FROM w0 WHERE w <> ''), dcb AS (SELECT doc_id, tgt, b, CAST(COUNT(*) AS BIGINT) AS cnt FROM w2 GROUP BY 1, 2, 3), src AS (SELECT b, CAST(SUM(cnt) AS BIGINT) AS cs FROM dcb GROUP BY b), tg AS (SELECT b, CAST(SUM(cnt) AS BIGINT) AS ct FROM dcb WHERE tgt GROUP BY b), tot AS (SELECT (SELECT CAST(SUM(cs) AS BIGINT) FROM src) AS ns, (SELECT CAST(SUM(ct) AS BIGINT) FROM tg) AS nt), lr AS (SELECT src.b, CAST(round(ln(CAST(CAST(COALESCE(tg.ct, 0) + 1 AS DECIMAL(38,0)) * (tot.ns + 64) AS DOUBLE) / CAST(CAST(src.cs + 1 AS DECIMAL(38,0)) * (tot.nt + 64) AS DOUBLE)), 9) AS DECIMAL(18,9)) AS lr FROM src LEFT JOIN tg ON src.b = tg.b, tot), agg AS (SELECT dcb.doc_id, CAST(SUM(dcb.cnt) AS BIGINT) AS n_tokens, CAST(SUM(CAST(dcb.cnt AS DECIMAL(18,0)) * lr.lr) AS DOUBLE) AS lw FROM dcb JOIN lr ON dcb.b = lr.b GROUP BY dcb.doc_id) SELECT doc_id, n_tokens, round(lw, 6) AS log_weight, lw > 0.0 AS target_like FROM agg ORDER BY doc_id""",
-    // |d|-domain census ranks (doubled averages), DECIMAL(38,0) W/tie
-    // sums, one pinned tie-corrected z — the paired mannWhitney shape
-    "q485_wilcoxon_signed_rank" ->
-      """WITH y AS (SELECT o_custkey AS k, year(o_orderdate) AS yr, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents FROM orders WHERE year(o_orderdate) IN (1995, 1996) GROUP BY 1, 2), p AS (SELECT a.k, a.cents AS a, b.cents AS b FROM y a JOIN y b ON a.k = b.k AND a.yr = 1996 AND b.yr = 1995), dd AS (SELECT a - b AS d FROM p), cz AS (SELECT COUNT(*) AS n_zero FROM dd WHERE d = 0), c AS (SELECT abs(d) AS ad, CAST(SUM(CASE WHEN d > 0 THEN 1 ELSE 0 END) AS BIGINT) AS npos, COUNT(*) AS t FROM dd WHERE d <> 0 GROUP BY 1), r AS (SELECT ad, npos, t, SUM(t) OVER (ORDER BY ad ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS ct FROM c), r2 AS (SELECT npos, t, 2 * ct - t + 1 AS r2 FROM r), ag AS (SELECT CAST(SUM(t) AS BIGINT) AS n, SUM(CAST(npos AS DECIMAL(38,0)) * CAST(r2 AS DECIMAL(38,0))) AS w2, SUM(CAST(t AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0)) - CAST(t AS DECIMAL(38,0))) AS ties FROM r2) SELECT COALESCE(n, 0) AS n_pairs, (SELECT n_zero FROM cz) AS n_zero, CASE WHEN n > 0 THEN CAST(w2 AS DOUBLE) / 2.0 END AS w_plus, CASE WHEN n > 0 THEN round((CAST(w2 AS DOUBLE) - CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0) / 2.0) / (2.0 * sqrt(CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) + 1.0) * (2.0 * CAST(n AS DOUBLE) + 1.0) / 24.0 - CAST(ties AS DOUBLE) / 48.0)), 6) END AS z FROM ag""",
-    // digit censuses add across batches, so the drained store replays
-    // the one-pass q291 shape over events.value verbatim
-    "q486_stream_benford" ->
-      """WITH obs AS (SELECT CAST(substr(CAST(CAST(floor(value) AS BIGINT) AS VARCHAR), 1, 1) AS INT) AS digit, COUNT(*) AS n FROM events WHERE value >= 1 GROUP BY 1), sp AS (SELECT * FROM (VALUES (1, 0.301029995664), (2, 0.176091259056), (3, 0.124938736608), (4, 0.096910013008), (5, 0.079181246048), (6, 0.066946789631), (7, 0.057991946978), (8, 0.051152522447), (9, 0.045757490561)) AS t(digit, expected_p)), j AS (SELECT sp.digit, COALESCE(obs.n, 0) AS n, sp.expected_p FROM sp LEFT JOIN obs USING (digit)), t2 AS (SELECT digit, n, expected_p, expected_p * CAST(SUM(n) OVER () AS DOUBLE) AS expected_n FROM j), d AS (SELECT digit, n, expected_p, expected_n, CAST(round((CAST(n AS DOUBLE) - expected_n) * (CAST(n AS DOUBLE) - expected_n) / expected_n, 6) AS DECIMAL(18,6)) AS chi2_term FROM t2) SELECT digit, n, expected_p, round(expected_n, 6) AS expected_n, CAST(chi2_term AS DOUBLE) AS chi2_term, CAST(SUM(chi2_term) OVER () AS DOUBLE) AS chi2_total FROM d ORDER BY digit""",
-    // exact 7-element order statistics (list_sort + [4]) inside the
-    // key-partitioned centered window; pinned 4.4478 robust compare
-    "q487_hampel_filter" ->
-      """WITH h AS (SELECT user_id, epoch_ns(ts)//1000000000//3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS cents FROM events GROUP BY 1, 2), w AS (SELECT user_id, hid, cents, list(cents) OVER win AS win FROM h WINDOW win AS (PARTITION BY user_id ORDER BY hid ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)), m AS (SELECT user_id, hid, cents, win, len(win) AS nwin, CASE WHEN len(win) = 7 THEN list_sort(win)[4] END AS med FROM w), d AS (SELECT user_id, hid, cents, nwin, med, CASE WHEN nwin = 7 THEN list_sort(list_transform(win, x -> abs(x - med)))[4] END AS mad FROM m) SELECT user_id, hid, cents, med, mad, CASE WHEN nwin = 7 THEN CAST(abs(cents - med) AS DOUBLE) > 4.4478 * CAST(mad AS DOUBLE) END AS is_outlier FROM d ORDER BY user_id, hid""",
-    // exact DECIMAL moments, pinned sd, integer micro-shares + Hamilton
-    // largest-remainder — allocations replay as pure integers
-    "q488_neyman_allocation" ->
-      """WITH b AS (SELECT CAST(o_orderpriority AS VARCHAR) AS stratum, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c FROM orders), per AS (SELECT stratum, COUNT(*) AS n_rows, SUM(CAST(c AS DECIMAL(38,0))) AS sv, SUM(CAST(c AS DECIMAL(38,0)) * CAST(c AS DECIMAL(38,0))) AS svv FROM b GROUP BY 1), sd0 AS (SELECT stratum, n_rows, CASE WHEN n_rows > 1 THEN round(sqrt((CAST(svv AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE) / CAST(n_rows AS DOUBLE)) / (CAST(n_rows AS DOUBLE) - 1.0)), 6) ELSE 0.0 END AS sd FROM per), w0 AS (SELECT stratum, n_rows, sd, CAST(round(CAST(n_rows AS DOUBLE) * sd, 6) AS DECIMAL(28,6)) AS w FROM sd0), sh AS (SELECT stratum, n_rows, sd, CASE WHEN SUM(w) OVER () > 0 THEN CAST(w AS DOUBLE) / CAST(SUM(w) OVER () AS DOUBLE) ELSE CAST(n_rows AS DOUBLE) / CAST(SUM(n_rows) OVER () AS DOUBLE) END AS share FROM w0), su0 AS (SELECT stratum, n_rows, sd, CAST(round(share * 1.0e12, 0) AS BIGINT) AS su FROM sh), st AS (SELECT stratum, n_rows, sd, su, SUM(su) OVER () AS s_total FROM su0), ba AS (SELECT stratum, n_rows, sd, su, (500 * su) // s_total AS base, (500 * su) % s_total AS rem FROM st), lf AS (SELECT stratum, n_rows, sd, su, base, 500 - SUM(base) OVER () AS leftover, ROW_NUMBER() OVER (ORDER BY rem DESC, stratum) AS erk FROM ba) SELECT stratum, n_rows, sd, su AS weight_ppt, CAST(base + CASE WHEN erk <= leftover THEN 1 ELSE 0 END AS BIGINT) AS alloc, (base + CASE WHEN erk <= leftover THEN 1 ELSE 0 END) > n_rows AS over_allocated FROM lf ORDER BY stratum""",
-    // metadata-sized: per-file [min,max] from the portable md5-bucket /
-    // range-bucket layouts; boundary sweep + interval self-join replay
-    "q489_cluster_depth" ->
-      """WITH k0 AS (SELECT CAST(o_orderkey AS BIGINT) AS k FROM orders), mx AS (SELECT MAX(k) AS maxk FROM k0), f AS (SELECT 'hash' AS layout, CAST(concat('0x', substr(md5(CAST(k AS VARCHAR)), 1, 13)) AS BIGINT) % 8 AS fid, k FROM k0 UNION ALL SELECT 'range', (k - 1) // ((SELECT maxk FROM mx) // 8 + 1), k FROM k0), st AS (SELECT layout, fid, MIN(k) AS mn, MAX(k) AS mx2 FROM f GROUP BY 1, 2), ev AS (SELECT layout, mn AS pos, 1 AS delta FROM st UNION ALL SELECT layout, mx2 + 1, -1 FROM st), dep AS (SELECT layout, CAST(MAX(open) AS BIGINT) AS max_depth FROM (SELECT layout, SUM(delta) OVER (PARTITION BY layout ORDER BY pos, delta ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS open FROM ev) GROUP BY 1), pr AS (SELECT a.layout, COUNT(*) AS overlap_pairs FROM st a JOIN st b ON a.layout = b.layout AND a.fid < b.fid AND a.mn <= b.mx2 AND b.mn <= a.mx2 GROUP BY 1), nf AS (SELECT layout, COUNT(*) AS n_files FROM st GROUP BY 1) SELECT nf.layout, nf.n_files, COALESCE(pr.overlap_pairs, CAST(0 AS BIGINT)) AS overlap_pairs, dep.max_depth FROM nf LEFT JOIN pr ON nf.layout = pr.layout JOIN dep ON nf.layout = dep.layout ORDER BY nf.layout""",
-    // doubled tie-run score sums (no division in the exact path), grid
-    // decimals for A and the score second moment, pinned z
-    "q490_ansari_bradley" ->
-      """WITH o AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v, o_orderpriority = '1-URGENT' AS isa FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')), c AS (SELECT v, CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS na, COUNT(*) AS t FROM o GROUP BY 1), s AS (SELECT na, t, SUM(t) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c2, SUM(t) OVER () AS nn FROM c), st AS (SELECT na, t, c2, nn, c2 - t + 1 AS lo, (nn + 1) // 2 AS k FROM s), sc AS (SELECT na, t, nn, CASE WHEN lo <= LEAST(c2, k) THEN (CAST(lo AS DECIMAL(38,0)) + CAST(LEAST(c2, k) AS DECIMAL(38,0))) * (CAST(LEAST(c2, k) AS DECIMAL(38,0)) - CAST(lo AS DECIMAL(38,0)) + 1) ELSE CAST(0 AS DECIMAL(38,0)) END + CASE WHEN GREATEST(lo, k + 1) <= c2 THEN CAST(nn + 1 AS DECIMAL(38,0)) * (CAST(c2 AS DECIMAL(38,0)) - CAST(GREATEST(lo, k + 1) AS DECIMAL(38,0)) + 1) * 2 - (CAST(GREATEST(lo, k + 1) AS DECIMAL(38,0)) + CAST(c2 AS DECIMAL(38,0))) * (CAST(c2 AS DECIMAL(38,0)) - CAST(GREATEST(lo, k + 1) AS DECIMAL(38,0)) + 1) ELSE CAST(0 AS DECIMAL(38,0)) END AS sg2 FROM st), ag AS (SELECT CAST(SUM(na) AS BIGINT) AS n_a, CAST(SUM(t - na) AS BIGINT) AS n_b, CAST(SUM(t) AS BIGINT) AS n, SUM(sg2) AS m1x2, SUM(CAST(round(CAST(sg2 AS DOUBLE) * CAST(sg2 AS DOUBLE) / (4.0 * CAST(t AS DOUBLE)), 9) AS DECIMAL(28,9))) AS m2, SUM(CAST(round(CAST(na AS DOUBLE) * CAST(sg2 AS DOUBLE) / (2.0 * CAST(t AS DOUBLE)), 9) AS DECIMAL(28,9))) AS ab FROM sc) SELECT n_a, n_b, CAST(ab AS DOUBLE) AS ab_stat, round(CASE WHEN CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) * (CAST(m2 AS DOUBLE) - CAST(n AS DOUBLE) * (CAST(m1x2 AS DOUBLE) / (2.0 * CAST(n AS DOUBLE))) * (CAST(m1x2 AS DOUBLE) / (2.0 * CAST(n AS DOUBLE)))) > 0.0 THEN (CAST(ab AS DOUBLE) - CAST(n_a AS DOUBLE) * (CAST(m1x2 AS DOUBLE) / (2.0 * CAST(n AS DOUBLE)))) / sqrt(CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) * (CAST(m2 AS DOUBLE) - CAST(n AS DOUBLE) * (CAST(m1x2 AS DOUBLE) / (2.0 * CAST(n AS DOUBLE))) * (CAST(m1x2 AS DOUBLE) / (2.0 * CAST(n AS DOUBLE))))) END, 6) AS z FROM ag""",
-    // the TopK aggregator's (|Δ| desc, key asc) total order replays as
-    // a rank filter; pinned midpoint cutoff from min/max scan
-    "q491_top_movers" -> topMoversOracleSql,
-    // censuses add across batches: the drained store IS batch q491
-    "q497_stream_top_movers" -> topMoversOracleSql,
-    // integer micro-ratio census, ceiling-rank order-stat p90, pinned
-    // corpus ratios — the q31 tokenizers aggregated per language
-    "q492_tokenizer_fertility" ->
-      """WITH pd AS (SELECT lang, CAST(array_length(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS BIGINT) AS w, CAST(array_length(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\s]')) AS BIGINT) AS b, CAST(length(text) AS BIGINT) AS nchars FROM documents), pd2 AS (SELECT lang, w, b, nchars, (b * 1000000) // w AS fert_ppm FROM pd WHERE w > 0), tot AS (SELECT lang, COUNT(*) AS n_docs, CAST(SUM(w) AS BIGINT) AS words, CAST(SUM(b) AS BIGINT) AS bpe_tokens, CAST(SUM(nchars) AS BIGINT) AS chars FROM pd2 GROUP BY 1), cen AS (SELECT lang, fert_ppm, COUNT(*) AS t FROM pd2 GROUP BY 1, 2), cc AS (SELECT lang, fert_ppm, SUM(t) OVER (PARTITION BY lang ORDER BY fert_ppm ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c, SUM(t) OVER (PARTITION BY lang) AS n FROM cen), p90 AS (SELECT lang, MIN(fert_ppm) AS p90_fert_ppm FROM cc WHERE c >= (9 * n + 9) // 10 GROUP BY 1) SELECT tot.lang, tot.n_docs, tot.words, tot.bpe_tokens, round(CAST(bpe_tokens AS DOUBLE) / CAST(words AS DOUBLE), 6) AS fertility, round(CAST(chars AS DOUBLE) / CAST(bpe_tokens AS DOUBLE), 6) AS chars_per_token, p90.p90_fert_ppm FROM tot JOIN p90 USING (lang) ORDER BY lang""",
-    "q493_bipartite_check" -> bipartiteOracleSql,
-    // truth = JW >= 0.95 over the broadcast sample; prefix-8 equi-block
-    // and the w=4 sorted-neighborhood window replay identically
-    "q494_blocking_recall" ->
-      """WITH cl AS (SELECT CAST(c_custkey AS BIGINT) AS rid, c_name AS name FROM customer WHERE c_custkey < 300), dr AS (SELECT CAST(c_custkey + 1000000 AS BIGINT) AS rid, concat(substring(c_name, 1, length(c_name) - 2), substring(c_name, length(c_name), 1), substring(c_name, length(c_name) - 1, 1)) AS name FROM customer WHERE c_custkey < 300), recs AS (SELECT * FROM cl UNION ALL SELECT * FROM dr), tr AS (SELECT a.rid AS id_a, b.rid AS id_b, 1 AS t FROM recs a JOIN recs b ON a.rid < b.rid AND jaro_winkler_similarity(a.name, b.name) >= 0.95), pb AS (SELECT rid, substring(name, 10, 8) AS blk FROM recs), pc AS (SELECT DISTINCT a.rid AS id_a, b.rid AS id_b, 1 AS c FROM pb a JOIN pb b ON a.blk = b.blk AND a.rid < b.rid), rk AS (SELECT rid, ROW_NUMBER() OVER (ORDER BY name, rid) AS rnk FROM recs), bl AS (SELECT rid, rnk, (rnk - 1) // 4 AS blk FROM rk UNION ALL SELECT rid, rnk, (rnk - 1) // 4 + 1 FROM rk), sc AS (SELECT DISTINCT LEAST(a.rid, b.rid) AS id_a, GREATEST(a.rid, b.rid) AS id_b, 1 AS c FROM bl a JOIN bl b ON a.blk = b.blk AND b.rnk > a.rnk AND b.rnk - a.rnk <= 4), m1 AS (SELECT 'prefix8' AS method, CAST(SUM(t) AS BIGINT) AS n_truth, CAST(SUM(c) AS BIGINT) AS n_cand, CAST(SUM(t * c) AS BIGINT) AS n_hit FROM tr FULL JOIN pc USING (id_a, id_b)), m2 AS (SELECT 'sn4' AS method, CAST(SUM(t) AS BIGINT) AS n_truth, CAST(SUM(c) AS BIGINT) AS n_cand, CAST(SUM(t * c) AS BIGINT) AS n_hit FROM tr FULL JOIN sc USING (id_a, id_b)), mm AS (SELECT * FROM m1 UNION ALL SELECT * FROM m2) SELECT method, n_truth, n_cand, n_hit, round(CAST(n_hit AS DOUBLE) / CAST(n_cand AS DOUBLE), 6) AS precision, round(CAST(n_hit AS DOUBLE) / CAST(n_truth AS DOUBLE), 6) AS recall FROM mm ORDER BY method""",
-    // one exact DECIMAL(38,0) moment pass, grid-rounded pairwise r's,
-    // pinned partial formula over the grid values
-    "q495_partial_corr" ->
-      """WITH per AS (SELECT l_orderkey, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS x, COUNT(*) AS y, CAST(SUM(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS z FROM lineitem GROUP BY 1), ag AS (SELECT COUNT(*) AS n, SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(y AS DECIMAL(38,0))) AS sy, SUM(CAST(z AS DECIMAL(38,0))) AS sz, SUM(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))) AS sxx, SUM(CAST(y AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS syy, SUM(CAST(z AS DECIMAL(38,0)) * CAST(z AS DECIMAL(38,0))) AS szz, SUM(CAST(x AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS sxy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(z AS DECIMAL(38,0))) AS sxz, SUM(CAST(y AS DECIMAL(38,0)) * CAST(z AS DECIMAL(38,0))) AS syz FROM per), rr AS (SELECT CAST(n AS BIGINT) AS n, round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 9) AS r_xy, round((CAST(n AS DOUBLE) * CAST(sxz AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sz AS DOUBLE)) / sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) * (CAST(n AS DOUBLE) * CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * CAST(sz AS DOUBLE))), 9) AS r_xz, round((CAST(n AS DOUBLE) * CAST(syz AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sz AS DOUBLE)) / sqrt((CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) * (CAST(n AS DOUBLE) * CAST(szz AS DOUBLE) - CAST(sz AS DOUBLE) * CAST(sz AS DOUBLE))), 9) AS r_yz FROM ag) SELECT n, r_xy, r_xz, r_yz, CASE WHEN (1.0 - r_xz * r_xz) * (1.0 - r_yz * r_yz) > 0.0 THEN round((r_xy - r_xz * r_yz) / sqrt((1.0 - r_xz * r_xz) * (1.0 - r_yz * r_yz)), 6) END AS r_xy_given_z FROM rr""",
-    // per-unit moment censuses, delta-method variance with the
-    // covariance term, pinned z — md5-split arms replay exactly
-    "q496_ratio_delta_z" ->
-      """WITH u AS (SELECT user_id, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS x, COUNT(*) AS y FROM events GROUP BY 1), a AS (SELECT x, y, CAST(concat('0x', substr(md5(concat('ratio1:', CAST(user_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 = 0 AS isa FROM u), g AS (SELECT CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS n_a, CAST(SUM(CASE WHEN NOT isa THEN 1 ELSE 0 END) AS BIGINT) AS n_b, SUM(CASE WHEN isa THEN CAST(x AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS sxa, SUM(CASE WHEN NOT isa THEN CAST(x AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS sxb, SUM(CASE WHEN isa THEN CAST(y AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS sya, SUM(CASE WHEN NOT isa THEN CAST(y AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS syb, SUM(CASE WHEN isa THEN CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS sxxa, SUM(CASE WHEN NOT isa THEN CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS sxxb, SUM(CASE WHEN isa THEN CAST(y AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS syya, SUM(CASE WHEN NOT isa THEN CAST(y AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS syyb, SUM(CASE WHEN isa THEN CAST(x AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS sxya, SUM(CASE WHEN NOT isa THEN CAST(x AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS sxyb FROM a), h AS (SELECT n_a, n_b, sya, syb, CAST(n_a AS DOUBLE) AS nda, CAST(n_b AS DOUBLE) AS ndb, CAST(sxa AS DOUBLE) / CAST(sya AS DOUBLE) AS ra, CAST(sxb AS DOUBLE) / CAST(syb AS DOUBLE) AS rb, CAST(sya AS DOUBLE) / CAST(n_a AS DOUBLE) AS ybara, CAST(syb AS DOUBLE) / CAST(n_b AS DOUBLE) AS ybarb, (CAST(n_a AS DOUBLE) * CAST(sxxa AS DOUBLE) - CAST(sxa AS DOUBLE) * CAST(sxa AS DOUBLE)) / (CAST(n_a AS DOUBLE) * (CAST(n_a AS DOUBLE) - 1.0)) AS vxa, (CAST(n_a AS DOUBLE) * CAST(syya AS DOUBLE) - CAST(sya AS DOUBLE) * CAST(sya AS DOUBLE)) / (CAST(n_a AS DOUBLE) * (CAST(n_a AS DOUBLE) - 1.0)) AS vya, (CAST(n_a AS DOUBLE) * CAST(sxya AS DOUBLE) - CAST(sxa AS DOUBLE) * CAST(sya AS DOUBLE)) / (CAST(n_a AS DOUBLE) * (CAST(n_a AS DOUBLE) - 1.0)) AS cxya, (CAST(n_b AS DOUBLE) * CAST(sxxb AS DOUBLE) - CAST(sxb AS DOUBLE) * CAST(sxb AS DOUBLE)) / (CAST(n_b AS DOUBLE) * (CAST(n_b AS DOUBLE) - 1.0)) AS vxb, (CAST(n_b AS DOUBLE) * CAST(syyb AS DOUBLE) - CAST(syb AS DOUBLE) * CAST(syb AS DOUBLE)) / (CAST(n_b AS DOUBLE) * (CAST(n_b AS DOUBLE) - 1.0)) AS vyb, (CAST(n_b AS DOUBLE) * CAST(sxyb AS DOUBLE) - CAST(sxb AS DOUBLE) * CAST(syb AS DOUBLE)) / (CAST(n_b AS DOUBLE) * (CAST(n_b AS DOUBLE) - 1.0)) AS cxyb FROM g), i AS (SELECT n_a, n_b, ra, rb, (vxa + ra * ra * vya - 2.0 * ra * cxya) / (nda * ybara * ybara) AS va, (vxb + rb * rb * vyb - 2.0 * rb * cxyb) / (ndb * ybarb * ybarb) AS vb2, n_a > 1 AND n_b > 1 AND sya <> 0 AND syb <> 0 AS ok FROM h) SELECT n_a, n_b, CASE WHEN ok THEN round(ra, 6) END AS ratio_a, CASE WHEN ok THEN round(rb, 6) END AS ratio_b, CASE WHEN ok AND va + vb2 > 0.0 THEN round((ra - rb) / sqrt(va + vb2), 6) END AS z FROM i""",
-    // the q30 langid CASE verbatim, then label-domain windows only
-    "q498_langid_confusion" ->
-      """WITH m AS (SELECT lang AS label, ' ' || lower(text) || ' ' AS p FROM documents), sc AS (SELECT label, (length(p) - length(replace(p, ' the ', ' '))) / 4 + (length(p) - length(replace(p, ' a ', ' '))) / 2 AS s_en, (length(p) - length(replace(p, ' der ', ' '))) / 4 + (length(p) - length(replace(p, ' und ', ' '))) / 4 AS s_de, (length(p) - length(replace(p, ' el ', ' '))) / 3 + (length(p) - length(replace(p, ' los ', ' '))) / 4 AS s_es, (length(p) - length(replace(p, ' le ', ' '))) / 3 + (length(p) - length(replace(p, ' et ', ' '))) / 3 AS s_fr FROM m), pr AS (SELECT label, CASE WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr AND s_en > 0 THEN 'en' WHEN s_de > s_en AND s_de >= s_es AND s_de >= s_fr AND s_de > 0 THEN 'de' WHEN s_es > s_en AND s_es > s_de AND s_es >= s_fr AND s_es > 0 THEN 'es' WHEN s_fr > s_en AND s_fr > s_de AND s_fr > s_es AND s_fr > 0 THEN 'fr' ELSE 'unknown' END AS pred FROM sc), cells AS (SELECT label, pred, COUNT(*) AS n FROM pr GROUP BY 1, 2), w AS (SELECT label, pred, n, SUM(n) OVER (PARTITION BY label) AS label_n, SUM(CASE WHEN label = pred THEN n ELSE 0 END) OVER () AS hits, SUM(n) OVER () AS tot FROM cells) SELECT label, pred, n, CAST(label_n AS BIGINT) AS label_n, round(CAST(n AS DOUBLE) / CAST(label_n AS DOUBLE), 6) AS share_of_label, round(CAST(hits AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS accuracy FROM w ORDER BY label, pred""",
-    // pooled doubled ranks, tie-corrected sigma, A&S tail polynomial in
-    // the identical literal order, q420 step-up over the pair family
-    "q499_dunn_posthoc" ->
-      """WITH o AS (SELECT CAST(o_orderpriority AS VARCHAR) AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM orders), vg AS (SELECT CAST(cents AS DOUBLE) AS v, g, COUNT(*) AS tvg FROM o GROUP BY 1, 2), bv AS (SELECT v, CAST(SUM(tvg) AS BIGINT) AS t FROM vg GROUP BY 1), rk AS (SELECT v, t, SUM(t) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c FROM bv), r2t AS (SELECT v, t, 2 * c - t + 1 AS r2 FROM rk), pg AS (SELECT g, CAST(SUM(tvg) AS BIGINT) AS n_g, SUM(CAST(tvg AS DECIMAL(38,0)) * CAST(r2 AS DECIMAL(38,0))) AS r2sum FROM vg JOIN r2t USING (v) GROUP BY 1), pg2 AS (SELECT g, n_g, round(CAST(r2sum AS DOUBLE) / CAST(n_g AS DOUBLE), 9) AS mr2 FROM pg), gl AS (SELECT SUM(CAST(t AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0)) - CAST(t AS DECIMAL(38,0))) AS ties, CAST(SUM(t) AS BIGINT) AS nn FROM r2t), pr AS (SELECT a.g AS g_i, a.n_g AS n_i, a.mr2 AS mr2_i, b.g AS g_j, b.n_g AS n_j, b.mr2 AS mr2_j FROM pg2 a JOIN pg2 b ON a.g < b.g), zz AS (SELECT g_i, g_j, n_i, n_j, mr2_i, mr2_j, (mr2_i - mr2_j) / 2.0 / sqrt((CAST(nn AS DOUBLE) * (CAST(nn AS DOUBLE) + 1.0) / 12.0 - CAST(ties AS DOUBLE) / (12.0 * (CAST(nn AS DOUBLE) - 1.0))) * (1.0 / CAST(n_i AS DOUBLE) + 1.0 / CAST(n_j AS DOUBLE))) AS z FROM pr, gl), pt AS (SELECT g_i, g_j, n_i, n_j, mr2_i, mr2_j, z, 1.0 / (1.0 + 0.2316419 * abs(z)) AS tt FROM zz), pp AS (SELECT g_i, g_j, n_i, n_j, mr2_i, mr2_j, round(z, 6) AS zr, round(2.0 * 0.3989422804014327 * exp(-(abs(z) * abs(z)) / 2.0) * ((((1.330274429 * tt - 1.821255978) * tt + 1.781477937) * tt - 0.356563782) * tt + 0.319381530) * tt, 9) AS p FROM pt), bh AS (SELECT g_i, g_j, n_i, n_j, mr2_i, mr2_j, zr, p, CAST(ROW_NUMBER() OVER (ORDER BY p, g_i, g_j) AS BIGINT) AS r, CAST(COUNT(*) OVER () AS BIGINT) AS m FROM pp), km AS (SELECT MAX(CASE WHEN p * CAST(m AS DOUBLE) <= CAST(r AS DOUBLE) * 0.05 THEN r END) AS kmax FROM bh) SELECT g_i, g_j, n_i, n_j, mr2_i / 2.0 AS mean_rank_i, mr2_j / 2.0 AS mean_rank_j, zr AS z, p, r AS p_rank, (km.kmax IS NOT NULL AND r <= km.kmax) AS significant FROM bh, km ORDER BY p_rank""",
-    // the q100 iteration replay with the teleport floor confined to the
-    // source set; decimal-grid contributions, (ppr desc, node) cut
-    "q500_personalized_pagerank" ->
-      s"""WITH pairs AS (SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp FROM lineitem JOIN orders ON l_orderkey = o_orderkey), edges AS (SELECT cust AS src, -supp AS dst FROM pairs UNION ALL SELECT -supp AS src, cust AS dst FROM pairs), deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY src), srcs AS (SELECT CAST(c_custkey AS BIGINT) AS node FROM customer WHERE c_custkey <= 4), base AS (SELECT d.node, d.deg, CASE WHEN s.node IS NOT NULL THEN 1 ELSE 0 END AS is_src FROM deg d LEFT JOIN srcs s ON d.node = s.node), pr0 AS (SELECT node, deg, is_src, CAST(is_src AS DOUBLE) AS pr FROM base), it1 AS (SELECT e.dst AS node, SUM(CAST(p.pr / p.deg * ${0.85} AS DECIMAL(28,9))) AS c FROM edges e JOIN pr0 p ON e.src = p.node GROUP BY e.dst), pr1 AS (SELECT b.node, b.deg, b.is_src, ${1.0 - 0.85} * CAST(b.is_src AS DOUBLE) + COALESCE(CAST(i.c AS DOUBLE), 0.0) AS pr FROM base b LEFT JOIN it1 i ON b.node = i.node), it2 AS (SELECT e.dst AS node, SUM(CAST(p.pr / p.deg * ${0.85} AS DECIMAL(28,9))) AS c FROM edges e JOIN pr1 p ON e.src = p.node GROUP BY e.dst), pr2 AS (SELECT b.node, b.deg, b.is_src, ${1.0 - 0.85} * CAST(b.is_src AS DOUBLE) + COALESCE(CAST(i.c AS DOUBLE), 0.0) AS pr FROM base b LEFT JOIN it2 i ON b.node = i.node), it3 AS (SELECT e.dst AS node, SUM(CAST(p.pr / p.deg * ${0.85} AS DECIMAL(28,9))) AS c FROM edges e JOIN pr2 p ON e.src = p.node GROUP BY e.dst), pr3 AS (SELECT b.node, b.deg, b.is_src, ${1.0 - 0.85} * CAST(b.is_src AS DOUBLE) + COALESCE(CAST(i.c AS DOUBLE), 0.0) AS pr FROM base b LEFT JOIN it3 i ON b.node = i.node) SELECT node, is_src = 1 AS is_source, round(pr, 6) AS ppr FROM pr3 ORDER BY ppr DESC, node LIMIT 100""",
-    "q501_dominant_period" -> dominantPeriodOracleSql,
-    // four (segment x arm) moment cells in one pass, Welch per-segment
-    // effects, pinned interaction z
-    "q502_hte_ztest" ->
-      """WITH e AS (SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents, event_type = 'view' AS s1, CAST(concat('0x', substr(md5(concat('hte1:', CAST(user_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 = 0 AS isa FROM events WHERE event_type IN ('view', 'click')), g AS (SELECT CAST(SUM(CASE WHEN s1 AND isa THEN 1 ELSE 0 END) AS BIGINT) AS n1a, SUM(CASE WHEN s1 AND isa THEN CAST(cents AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS s1a, SUM(CASE WHEN s1 AND isa THEN CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS ss1a, CAST(SUM(CASE WHEN s1 AND NOT isa THEN 1 ELSE 0 END) AS BIGINT) AS n1b, SUM(CASE WHEN s1 AND NOT isa THEN CAST(cents AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS s1b, SUM(CASE WHEN s1 AND NOT isa THEN CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS ss1b, CAST(SUM(CASE WHEN NOT s1 AND isa THEN 1 ELSE 0 END) AS BIGINT) AS n2a, SUM(CASE WHEN NOT s1 AND isa THEN CAST(cents AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS s2a, SUM(CASE WHEN NOT s1 AND isa THEN CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS ss2a, CAST(SUM(CASE WHEN NOT s1 AND NOT isa THEN 1 ELSE 0 END) AS BIGINT) AS n2b, SUM(CASE WHEN NOT s1 AND NOT isa THEN CAST(cents AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS s2b, SUM(CASE WHEN NOT s1 AND NOT isa THEN CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS ss2b FROM e), h AS (SELECT n1a, n1b, n2a, n2b, CAST(s1a AS DOUBLE) / CAST(n1a AS DOUBLE) AS m1a, CAST(s1b AS DOUBLE) / CAST(n1b AS DOUBLE) AS m1b, CAST(s2a AS DOUBLE) / CAST(n2a AS DOUBLE) AS m2a, CAST(s2b AS DOUBLE) / CAST(n2b AS DOUBLE) AS m2b, (CAST(n1a AS DOUBLE) * CAST(ss1a AS DOUBLE) - CAST(s1a AS DOUBLE) * CAST(s1a AS DOUBLE)) / (CAST(n1a AS DOUBLE) * (CAST(n1a AS DOUBLE) - 1.0)) / CAST(n1a AS DOUBLE) AS v1a, (CAST(n1b AS DOUBLE) * CAST(ss1b AS DOUBLE) - CAST(s1b AS DOUBLE) * CAST(s1b AS DOUBLE)) / (CAST(n1b AS DOUBLE) * (CAST(n1b AS DOUBLE) - 1.0)) / CAST(n1b AS DOUBLE) AS v1b, (CAST(n2a AS DOUBLE) * CAST(ss2a AS DOUBLE) - CAST(s2a AS DOUBLE) * CAST(s2a AS DOUBLE)) / (CAST(n2a AS DOUBLE) * (CAST(n2a AS DOUBLE) - 1.0)) / CAST(n2a AS DOUBLE) AS v2a, (CAST(n2b AS DOUBLE) * CAST(ss2b AS DOUBLE) - CAST(s2b AS DOUBLE) * CAST(s2b AS DOUBLE)) / (CAST(n2b AS DOUBLE) * (CAST(n2b AS DOUBLE) - 1.0)) / CAST(n2b AS DOUBLE) AS v2b FROM g), i AS (SELECT n1a, n1b, n2a, n2b, m1a - m1b AS d1, m2a - m2b AS d2, v1a + v1b AS vv1, v2a + v2b AS vv2, n1a > 1 AND n1b > 1 AND n2a > 1 AND n2b > 1 AS ok FROM h) SELECT n1a, n1b, n2a, n2b, CASE WHEN ok THEN round(d1, 6) END AS effect_seg1, CASE WHEN ok THEN round(d2, 6) END AS effect_seg2, CASE WHEN ok AND vv1 + vv2 > 0.0 THEN round((d1 - d2) / sqrt(vv1 + vv2), 6) END AS z_interaction FROM i""",
-    // declarative replay: cutoff/dropped are construction facts, row
-    // masses derive from the same orderkey predicates, below-cutoff = 0
-    "q503_expire_snapshots" ->
-      """SELECT CAST(3 AS BIGINT) AS cutoff, CAST(2 AS BIGINT) AS n_dropped, TRUE AS reclaimed, (SELECT COUNT(*) FROM orders WHERE o_orderkey % 2 = 0) + (SELECT COUNT(*) FROM orders WHERE o_orderkey % 2 = 1 AND o_orderkey % 3 = 0) + (SELECT COUNT(*) FROM orders WHERE o_orderkey % 2 = 1 AND o_orderkey % 3 = 1) AS rows_latest_before, (SELECT COUNT(*) FROM orders WHERE o_orderkey % 2 = 0) + (SELECT COUNT(*) FROM orders WHERE o_orderkey % 2 = 1 AND o_orderkey % 3 = 0) + (SELECT COUNT(*) FROM orders WHERE o_orderkey % 2 = 1 AND o_orderkey % 3 = 1) AS rows_latest_after, (SELECT COUNT(*) FROM orders WHERE o_orderkey % 2 = 0) AS rows_cutoff_before, (SELECT COUNT(*) FROM orders WHERE o_orderkey % 2 = 0) AS rows_cutoff_after, CAST(0 AS BIGINT) AS rows_below_cutoff""",
-    // (key, slot, value) census order stats with integer ceiling ranks;
-    // pinned newest-day probe; all windows slot-partitioned
-    "q504_seasonal_band" -> seasonalBandOracleSql,
-    // per-batch slot partial-sums add: the drained store IS batch q504
-    "q506_stream_seasonal_band" -> seasonalBandOracleSql,
-    // exact-integer chord cross-product argmax over the rank/cumsum curve
-    "q507_curve_knee" ->
-      """WITH rev AS (SELECT o_custkey, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents FROM orders GROUP BY 1), r AS (SELECT o_custkey, cents, CAST(ROW_NUMBER() OVER (ORDER BY cents DESC, o_custkey) AS BIGINT) AS x, CAST(SUM(cents) OVER (ORDER BY cents DESC, o_custkey ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS y FROM rev), e AS (SELECT MIN(x) AS x1, arg_min(y, x) AS y1, MAX(x) AS xn, arg_max(y, x) AS yn FROM r), d AS (SELECT x, y, abs((CAST(yn AS DECIMAL(38,0)) - CAST(y1 AS DECIMAL(38,0))) * (CAST(x AS DECIMAL(38,0)) - CAST(x1 AS DECIMAL(38,0))) - (CAST(xn AS DECIMAL(38,0)) - CAST(x1 AS DECIMAL(38,0))) * (CAST(y AS DECIMAL(38,0)) - CAST(y1 AS DECIMAL(38,0)))) AS dist FROM r, e), k AS (SELECT x, y, dist, ROW_NUMBER() OVER (ORDER BY dist DESC, x) AS rk FROM d) SELECT (SELECT COUNT(*) FROM r) AS n_points, (SELECT MIN(x) FROM r) AS x_lo, (SELECT MAX(x) FROM r) AS x_hi, x AS knee_x, y AS knee_y, CAST(dist AS DOUBLE) AS chord_cross FROM k WHERE rk = 1""",
-    // exact DECIMAL weight moments, two pinned ratios
-    "q508_ess_weights" ->
-      """WITH b AS (SELECT CAST(o_orderpriority AS VARCHAR) AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS w FROM orders) SELECT g, COUNT(*) AS n, round(CAST(SUM(CAST(w AS DECIMAL(38,0))) AS DOUBLE) * CAST(SUM(CAST(w AS DECIMAL(38,0))) AS DOUBLE) / CAST(SUM(CAST(w AS DECIMAL(38,0)) * CAST(w AS DECIMAL(38,0))) AS DOUBLE), 6) AS ess, round(CAST(SUM(CAST(w AS DECIMAL(38,0))) AS DOUBLE) * CAST(SUM(CAST(w AS DECIMAL(38,0))) AS DOUBLE) / CAST(SUM(CAST(w AS DECIMAL(38,0)) * CAST(w AS DECIMAL(38,0))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS ess_ratio FROM b GROUP BY 1 ORDER BY 1""",
-    // one melted census, support cut, re-aggregate — the pinned mapping
-    "q505_rare_collapse" ->
-      """WITH m AS (SELECT 'p_type' AS "column", CAST(p_type AS VARCHAR) AS value FROM part UNION ALL SELECT 'p_brand', CAST(p_brand AS VARCHAR) FROM part), c AS (SELECT "column", value, COUNT(*) AS n FROM m GROUP BY 1, 2), o AS (SELECT "column", CASE WHEN n >= 5 THEN value ELSE '__other__' END AS out_value, n FROM c) SELECT "column", out_value, CAST(SUM(n) AS BIGINT) AS n_rows, CAST(COUNT(*) AS BIGINT) AS n_source_values, out_value = '__other__' AS collapsed FROM o GROUP BY 1, 2 ORDER BY 1, 2""",
-    // monotone prefix counts in one pass; Wilson terms computed at
-    // runtime in the identical op order (z pinned at 1.96)
-    "q509_wilson_funnel" -> wilsonFunnelOracleSql,
-    // OR-mergeable per-user flags: the drained store IS batch q509
-    "q514_stream_funnel" -> wilsonFunnelOracleSql,
-    // census + distributed top-K cut; per-K coverage over the exact
-    // cumulative token counts
-    "q510_vocab_coverage" -> vocabCoverageOracleSql,
-    // token censuses add: the drained store IS the batch curve
-    "q517_stream_vocab_coverage" -> vocabCoverageOracleSql,
-    // per-batch weight moments add: the drained store IS the batch ESS
-    // over events cents by type
-    "q511_stream_ess" ->
-      """WITH b AS (SELECT CAST(event_type AS VARCHAR) AS g, CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS w FROM events) SELECT g, COUNT(*) AS n, round(CAST(SUM(CAST(w AS DECIMAL(38,0))) AS DOUBLE) * CAST(SUM(CAST(w AS DECIMAL(38,0))) AS DOUBLE) / CAST(SUM(CAST(w AS DECIMAL(38,0)) * CAST(w AS DECIMAL(38,0))) AS DOUBLE), 6) AS ess, round(CAST(SUM(CAST(w AS DECIMAL(38,0))) AS DOUBLE) * CAST(SUM(CAST(w AS DECIMAL(38,0))) AS DOUBLE) / CAST(SUM(CAST(w AS DECIMAL(38,0)) * CAST(w AS DECIMAL(38,0))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS ess_ratio FROM b GROUP BY 1 ORDER BY 1""",
-    // the q420 Welch-z/A&S-p family with the step-DOWN scan: first
-    // failing rank kills everything after (min-window, never per-rank)
-    "q512_holm_bonferroni" ->
-      """WITH c AS (SELECT n.n_name, CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents FROM customer JOIN nation n ON c_nationkey = n_nationkey), g AS (SELECT n_name, CAST(COUNT(*) AS BIGINT) AS na, SUM(CAST(cents AS DECIMAL(38,0))) AS sa, SUM(CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0))) AS saa FROM c GROUP BY 1), t AS (SELECT CAST(COUNT(*) AS BIGINT) AS nt, SUM(CAST(cents AS DECIMAL(38,0))) AS st, SUM(CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0))) AS stt FROM c), j AS (SELECT n_name, na, CAST(sa AS DOUBLE) AS saD, CAST(saa AS DOUBLE) AS saaD, nt - na AS nb, CAST(st - sa AS DOUBLE) AS sbD, CAST(stt - saa AS DOUBLE) AS sbbD FROM g, t), zc AS (SELECT n_name, na, nb, (saD / CAST(na AS DOUBLE) - sbD / CAST(nb AS DOUBLE)) / sqrt(((CAST(na AS DOUBLE) * saaD - saD * saD) / (CAST(na AS DOUBLE) * (CAST(na AS DOUBLE) - 1.0))) / CAST(na AS DOUBLE) + ((CAST(nb AS DOUBLE) * sbbD - sbD * sbD) / (CAST(nb AS DOUBLE) * (CAST(nb AS DOUBLE) - 1.0))) / CAST(nb AS DOUBLE)) AS z FROM j), pt AS (SELECT n_name, na, nb, z, 1.0 / (1.0 + 0.2316419 * abs(z)) AS tt FROM zc), pp AS (SELECT n_name, na, CASE WHEN na > 1 AND nb > 1 THEN round(z, 6) END AS zr, CASE WHEN na > 1 AND nb > 1 THEN round(2.0 * 0.3989422804014327 * exp(-(abs(z) * abs(z)) / 2.0) * ((((1.330274429 * tt - 1.821255978) * tt + 1.781477937) * tt - 0.356563782) * tt + 0.319381530) * tt, 9) END AS p FROM pt), hb AS (SELECT n_name, na, zr, p, CAST(ROW_NUMBER() OVER (ORDER BY p, n_name) AS BIGINT) AS r, CAST(COUNT(*) OVER () AS BIGINT) AS m FROM pp WHERE p IS NOT NULL), kf AS (SELECT MIN(CASE WHEN p * (CAST(m AS DOUBLE) - CAST(r AS DOUBLE) + 1.0) > 0.05 THEN r END) AS kfail FROM hb) SELECT n_name AS g, na AS n, zr AS z, p, r AS p_rank, round(0.05 / (CAST(m AS DOUBLE) - CAST(r AS DOUBLE) + 1.0), 9) AS holm_crit, (kf.kfail IS NULL OR r < kf.kfail) AS rejected FROM hb, kf UNION ALL SELECT n_name AS g, na AS n, zr AS z, p, CAST(NULL AS BIGINT) AS p_rank, CAST(NULL AS DOUBLE) AS holm_crit, CAST(NULL AS BOOLEAN) AS rejected FROM pp WHERE p IS NULL ORDER BY p_rank""",
-    // every number is a construction fact of the staged 8-version lake
-    "q513_log_health" ->
-      """SELECT CAST(8 AS BIGINT) AS latest_version, CAST(8 AS BIGINT) AS n_log_entries, CAST(1 AS BIGINT) AS n_checkpoints, CAST(6 AS BIGINT) AS ckpt_version, CAST(2 AS BIGINT) AS replay_at_latest, CAST(1 AS BIGINT) AS n_orphans, (SELECT COUNT(*) FROM orders) + (SELECT COUNT(*) FROM orders WHERE o_orderkey % 11 = 0) + (SELECT COUNT(*) FROM orders WHERE o_orderkey % 11 = 1) AS snapshot_rows""",
-    // the q84 banding with threshold 0, exact shingle Jaccard on the
-    // candidates, and the per-threshold precision sweep
-    "q515_dedup_threshold_sweep" ->
-      s"""$HASH_MACROS; WITH hs AS ($DOC_HASHES), shingled AS (SELECT doc_id, list_transform(range(CASE WHEN n >= 3 THEN n - 2 ELSE 1 END), p -> shmix(shmix(h[p+1], coalesce(h[p+2], ${padLit(1)})), coalesce(h[p+3], ${padLit(2)}))) AS sh FROM hs WHERE doc_id < 300), sets AS (SELECT doc_id AS id, list_sort(list_distinct(list_transform(sh, s -> tosigned(s)))) AS g FROM shingled), sigs AS (SELECT doc_id AS id, $sigSql AS sig FROM shingled), bands AS (SELECT id, sig, unnest(list_zip([${(0 until 8).map(bandSql).mkString(", ")}], [0,1,2,3,4,5,6,7])) AS z FROM sigs), wb AS (SELECT id, sig, z[2] AS band_idx, z[1] AS band_hash, ROW_NUMBER() OVER (PARTITION BY z[2], z[1] ORDER BY id) AS rn FROM bands), cp AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b, CAST(len(list_filter(range(32), i -> a.sig[i+1] = b.sig[i+1])) AS DOUBLE) / 32.0 AS est FROM wb a JOIN wb b ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.id < b.id WHERE a.rn <= 64 AND b.rn <= 64), sc AS (SELECT cp.id_a, cp.id_b, cp.est, CAST(len(list_intersect(sa.g, sb.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(sa.g, sb.g))) AS DOUBLE) AS tj FROM cp JOIN sets sa ON cp.id_a = sa.id JOIN sets sb ON cp.id_b = sb.id), u AS (SELECT unnest([0.3, 0.4, 0.5, 0.6, 0.7]) AS th) SELECT th AS threshold, CAST(COALESCE(SUM(CASE WHEN est >= th THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_candidates, CAST(COALESCE(SUM(CASE WHEN est >= th AND tj >= 0.35 THEN 1 ELSE 0 END), 0) AS BIGINT) AS n_true, CASE WHEN COALESCE(SUM(CASE WHEN est >= th THEN 1 ELSE 0 END), 0) > 0 THEN round(CAST(SUM(CASE WHEN est >= th AND tj >= 0.35 THEN 1 ELSE 0 END) AS DOUBLE) / CAST(SUM(CASE WHEN est >= th THEN 1 ELSE 0 END) AS DOUBLE), 6) END AS precision FROM u LEFT JOIN sc ON TRUE GROUP BY th ORDER BY threshold""",
-    // (segment, arm) censuses; pooled rates broadcast; grid verdicts
-    "q521_simpson_reversal" ->
-      """WITH e AS (SELECT event_type AS segment, CAST(concat('0x', substr(md5(concat('sp1:', CAST(user_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 = 0 AS isa, value > 100.0 AS succ FROM events), c AS (SELECT segment, CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS n_a, CAST(SUM(CASE WHEN NOT isa THEN 1 ELSE 0 END) AS BIGINT) AS n_b, CAST(SUM(CASE WHEN isa AND succ THEN 1 ELSE 0 END) AS BIGINT) AS s_a, CAST(SUM(CASE WHEN NOT isa AND succ THEN 1 ELSE 0 END) AS BIGINT) AS s_b FROM e GROUP BY 1), w AS (SELECT segment, n_a, n_b, round(CAST(s_a AS DOUBLE) / CAST(n_a AS DOUBLE), 6) AS rate_a, round(CAST(s_b AS DOUBLE) / CAST(n_b AS DOUBLE), 6) AS rate_b, round(CAST(s_a AS DOUBLE) / CAST(n_a AS DOUBLE) - CAST(s_b AS DOUBLE) / CAST(n_b AS DOUBLE), 6) AS diff, round(CAST(SUM(s_a) OVER () AS DOUBLE) / CAST(SUM(n_a) OVER () AS DOUBLE) - CAST(SUM(s_b) OVER () AS DOUBLE) / CAST(SUM(n_b) OVER () AS DOUBLE), 6) AS pooled_diff FROM c) SELECT segment, n_a, n_b, rate_a, rate_b, diff, pooled_diff, CASE WHEN n_a > 0 AND n_b > 0 THEN (diff > 0.0 AND pooled_diff < 0.0) OR (diff < 0.0 AND pooled_diff > 0.0) END AS reversed FROM w ORDER BY segment""",
-    // day-bucket census, leave-one-out grid thetas, (B-1)/B variance
-    "q522_jackknife_ratio" ->
-      """WITH d AS (SELECT strftime(ts, '%Y-%m-%d') AS b, CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS x, 1 AS y FROM events), cen AS (SELECT b, SUM(CAST(x AS DECIMAL(38,0))) AS x, SUM(CAST(y AS DECIMAL(38,0))) AS y FROM d GROUP BY 1), st AS (SELECT x, y, SUM(x) OVER () AS tx, SUM(y) OVER () AS ty, COUNT(*) OVER () AS nb FROM cen), th AS (SELECT tx, ty, nb, CAST(round(CAST(tx - x AS DOUBLE) / CAST(ty - y AS DOUBLE), 9) AS DECIMAL(28,9)) AS theta FROM st), tb AS (SELECT tx, ty, nb, theta, CAST(SUM(theta) OVER () AS DOUBLE) / CAST(nb AS DOUBLE) AS tbar FROM th), dv AS (SELECT tx, ty, nb, theta, CAST(round((CAST(theta AS DOUBLE) - tbar) * (CAST(theta AS DOUBLE) - tbar), 12) AS DECIMAL(28,12)) AS dev2 FROM tb) SELECT CAST(MAX(nb) AS BIGINT) AS n_buckets, MAX(round(CAST(tx AS DOUBLE) / CAST(ty AS DOUBLE), 6)) AS ratio, CASE WHEN MAX(nb) >= 2 AND SUM(CASE WHEN theta IS NULL THEN 1 ELSE 0 END) = 0 THEN round(sqrt((CAST(MAX(nb) AS DOUBLE) - 1.0) / CAST(MAX(nb) AS DOUBLE) * CAST(SUM(dev2) AS DOUBLE)), 6) END AS jack_se FROM dv""",
-    // per-arm ceiling-rank order stats from the value census; exact QTE
-    "q523_qte" -> qteOracleSql,
-    // per-arm value censuses add: the drained store IS batch q523
-    "q526_stream_qte" -> qteOracleSql,
-    // the q420 family with the monotone suffix-min q adjustment
-    "q524_bh_qvalues" ->
-      """WITH c AS (SELECT n.n_name, CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents FROM customer JOIN nation n ON c_nationkey = n_nationkey), g AS (SELECT n_name, CAST(COUNT(*) AS BIGINT) AS na, SUM(CAST(cents AS DECIMAL(38,0))) AS sa, SUM(CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0))) AS saa FROM c GROUP BY 1), t AS (SELECT CAST(COUNT(*) AS BIGINT) AS nt, SUM(CAST(cents AS DECIMAL(38,0))) AS st, SUM(CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0))) AS stt FROM c), j AS (SELECT n_name, na, CAST(sa AS DOUBLE) AS saD, CAST(saa AS DOUBLE) AS saaD, nt - na AS nb, CAST(st - sa AS DOUBLE) AS sbD, CAST(stt - saa AS DOUBLE) AS sbbD FROM g, t), zc AS (SELECT n_name, na, nb, (saD / CAST(na AS DOUBLE) - sbD / CAST(nb AS DOUBLE)) / sqrt(((CAST(na AS DOUBLE) * saaD - saD * saD) / (CAST(na AS DOUBLE) * (CAST(na AS DOUBLE) - 1.0))) / CAST(na AS DOUBLE) + ((CAST(nb AS DOUBLE) * sbbD - sbD * sbD) / (CAST(nb AS DOUBLE) * (CAST(nb AS DOUBLE) - 1.0))) / CAST(nb AS DOUBLE)) AS z FROM j), pt AS (SELECT n_name, na, nb, z, 1.0 / (1.0 + 0.2316419 * abs(z)) AS tt FROM zc), pp AS (SELECT n_name, na, CASE WHEN na > 1 AND nb > 1 THEN round(z, 6) END AS zr, CASE WHEN na > 1 AND nb > 1 THEN round(2.0 * 0.3989422804014327 * exp(-(abs(z) * abs(z)) / 2.0) * ((((1.330274429 * tt - 1.821255978) * tt + 1.781477937) * tt - 0.356563782) * tt + 0.319381530) * tt, 9) END AS p FROM pt), bq AS (SELECT n_name, na, zr, p, CAST(ROW_NUMBER() OVER (ORDER BY p, n_name) AS BIGINT) AS r, CAST(COUNT(*) OVER () AS BIGINT) AS m FROM pp WHERE p IS NOT NULL), qq AS (SELECT n_name, na, zr, p, r, round(p * CAST(m AS DOUBLE) / CAST(r AS DOUBLE), 9) AS qraw FROM bq), tq AS (SELECT n_name AS g, na AS n, zr AS z, p, r AS p_rank, MIN(qraw) OVER (ORDER BY r ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS q_value FROM qq) SELECT g, n, z, p, p_rank, q_value FROM tq UNION ALL SELECT n_name AS g, na AS n, zr AS z, p, CAST(NULL AS BIGINT) AS p_rank, CAST(NULL AS DOUBLE) AS q_value FROM pp WHERE p IS NULL ORDER BY p_rank""",
-    // what the foreign-layout chain walk must reproduce: the plain
-    // aggregate over the exported rows; snapshot_id is a construction
-    // fact (2 commits)
-    "q528_iceberg_export" ->
-      """SELECT o_orderpriority, COUNT(*) AS n, CAST(SUM(cents) AS BIGINT) AS total_cents, CAST(2 AS BIGINT) AS snapshot_id FROM (SELECT o_orderpriority, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM orders) GROUP BY 1 ORDER BY 1""",
-    // (key, slot) moment census; two pinned ratios, clamped
-    "q561_seasonal_strength" ->
-      """WITH h AS (SELECT event_type AS k, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id FROM events), c AS (SELECT k, hour_id, CAST(COUNT(*) AS BIGINT) AS cnt FROM h GROUP BY 1, 2), ps AS (SELECT k, hour_id % 24 AS slot, CAST(COUNT(*) AS BIGINT) AS n_h, SUM(CAST(cnt AS DECIMAL(38,0))) AS s_h, SUM(CAST(cnt AS DECIMAL(38,0)) * CAST(cnt AS DECIMAL(38,0))) AS ss_h FROM c GROUP BY 1, 2), pw AS (SELECT *, CAST(round(CAST(ss_h AS DOUBLE) - CAST(s_h AS DOUBLE) * CAST(s_h AS DOUBLE) / CAST(n_h AS DOUBLE), 6) AS DECIMAL(38,6)) AS w_term FROM ps), pk AS (SELECT k, CAST(SUM(n_h) AS BIGINT) AS n, CAST(COUNT(*) AS BIGINT) AS n_slots, SUM(s_h) AS s, SUM(ss_h) AS ss, SUM(w_term) AS ssw FROM pw GROUP BY k) SELECT k AS event_type, n AS n_buckets, n_slots, CASE WHEN CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE) > 0.0 THEN greatest(round(1.0 - CAST(ssw AS DOUBLE) / (CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE)), 6), 0.0) END AS strength FROM pk ORDER BY event_type""",
-    // q283's hash-arm census replayed, every CI log term pinned at 1e-9
-    // before the exp re-expansion
-    "q563_prop_effects" ->
-      """WITH a AS (SELECT CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS conv, CAST(concat('0x', substr(md5(concat('pe:', CAST(event_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 AS arm FROM events), g AS (SELECT CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a, CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b, CAST(SUM(CASE WHEN arm = 0 THEN conv ELSE 0 END) AS BIGINT) AS conv_a, CAST(SUM(CASE WHEN arm = 1 THEN conv ELSE 0 END) AS BIGINT) AS conv_b FROM a), c AS (SELECT n_a, n_b, conv_a, conv_b, CAST(conv_a AS DOUBLE) AS av, CAST(n_a - conv_a AS DOUBLE) AS bv, CAST(conv_b AS DOUBLE) AS cv, CAST(n_b - conv_b AS DOUBLE) AS dv, CAST(n_a AS DOUBLE) AS nav, CAST(n_b AS DOUBLE) AS nbv FROM g WHERE n_a > 0 AND n_b > 0) SELECT n_a, n_b, conv_a, conv_b, round(av / nav, 6) AS rate_a, round(cv / nbv, 6) AS rate_b, round(av / nav - cv / nbv, 6) AS risk_diff, CASE WHEN conv_a > 0 AND conv_b > 0 THEN round((av / nav) / (cv / nbv), 6) END AS risk_ratio, CASE WHEN conv_a > 0 AND conv_b > 0 THEN round(exp(round(ln((av / nav) / (cv / nbv)), 9) - 1.96 * round(sqrt(1.0 / av - 1.0 / nav + 1.0 / cv - 1.0 / nbv), 9)), 6) END AS rr_lo, CASE WHEN conv_a > 0 AND conv_b > 0 THEN round(exp(round(ln((av / nav) / (cv / nbv)), 9) + 1.96 * round(sqrt(1.0 / av - 1.0 / nav + 1.0 / cv - 1.0 / nbv), 9)), 6) END AS rr_hi, CASE WHEN conv_a > 0 AND conv_b > 0 AND n_a > conv_a AND n_b > conv_b THEN round(av * dv / (bv * cv), 6) END AS odds_ratio, CASE WHEN conv_a > 0 AND conv_b > 0 AND n_a > conv_a AND n_b > conv_b THEN round(exp(round(ln(av * dv / (bv * cv)), 9) - 1.96 * round(sqrt(1.0 / av + 1.0 / bv + 1.0 / cv + 1.0 / dv), 9)), 6) END AS or_lo, CASE WHEN conv_a > 0 AND conv_b > 0 AND n_a > conv_a AND n_b > conv_b THEN round(exp(round(ln(av * dv / (bv * cv)), 9) + 1.96 * round(sqrt(1.0 / av + 1.0 / bv + 1.0 / cv + 1.0 / dv), 9)), 6) END AS or_hi, round(2.0 * (asin(sqrt(av / nav)) - asin(sqrt(cv / nbv))), 6) AS cohens_h FROM c""",
-    // q147's hourly OLS census, residuals pinned to DECIMAL(28,9), lag-1
-    // differences and squares summed exactly per key
-    "q564_durbin_watson" ->
-      """WITH h AS (SELECT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id, COUNT(*) AS n FROM events GROUP BY 1, 2), b AS (SELECT event_type, CAST(hour_id - MIN(hour_id) OVER (PARTITION BY event_type) AS BIGINT) AS x, CAST(n AS BIGINT) AS y FROM h), a AS (SELECT event_type, COUNT(*) AS n, CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy, CAST(SUM(x * x) AS BIGINT) AS sxx, CAST(SUM(x * y) AS BIGINT) AS sxy, COUNT(DISTINCT x) AS nx FROM b GROUP BY 1), f AS (SELECT event_type, n, sx, sy, (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS slope FROM a WHERE nx >= 2 AND n >= 3), f2 AS (SELECT event_type, n, slope, (CAST(sy AS DOUBLE) - slope * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE) AS icept FROM f), r AS (SELECT b.event_type, b.x, f2.n, f2.slope, f2.icept, CAST(round(CAST(b.y AS DOUBLE) - (f2.icept + f2.slope * CAST(b.x AS DOUBLE)), 9) AS DECIMAL(28,9)) AS e FROM b JOIN f2 ON b.event_type = f2.event_type), r2 AS (SELECT *, lag(e) OVER (PARTITION BY event_type ORDER BY x) AS ep FROM r), t AS (SELECT event_type, MAX(n) AS n, round(MAX(slope), 6) AS slope, round(MAX(icept), 6) AS intercept, SUM(CASE WHEN ep IS NOT NULL THEN CAST(round((CAST(e AS DOUBLE) - CAST(ep AS DOUBLE)) * (CAST(e AS DOUBLE) - CAST(ep AS DOUBLE)), 9) AS DECIMAL(28,9)) END) AS num, SUM(CAST(round(CAST(e AS DOUBLE) * CAST(e AS DOUBLE), 9) AS DECIMAL(28,9))) AS den FROM r2 GROUP BY 1) SELECT event_type, n, slope, intercept, CASE WHEN CAST(den AS DOUBLE) > 0.0 THEN round(CAST(num AS DOUBLE) / CAST(den AS DOUBLE), 6) END AS dw, CASE WHEN CAST(den AS DOUBLE) > 0.0 THEN round(1.0 - CAST(num AS DOUBLE) / CAST(den AS DOUBLE) / 2.0, 6) END AS rho1 FROM t ORDER BY event_type""",
-    // (group, category) census → full grid shares → pair sweep on the
-    // category domain, term-pinned like the Spark side
-    "q565_categorical_distance" ->
-      """WITH cen AS (SELECT CAST(source AS VARCHAR) AS g, CAST(lang AS VARCHAR) AS cat, COUNT(*) AS n FROM documents GROUP BY 1, 2), tots AS (SELECT g, CAST(SUM(n) AS BIGINT) AS tot FROM cen GROUP BY 1), grid AS (SELECT gs.g, cs.cat, CAST(COALESCE(cen.n, 0) AS BIGINT) AS n, CAST(round(CAST(COALESCE(cen.n, 0) AS DOUBLE) / CAST(tots.tot AS DOUBLE), 9) AS DECIMAL(18,9)) AS p FROM (SELECT DISTINCT g FROM cen) gs CROSS JOIN (SELECT DISTINCT cat FROM cen) cs LEFT JOIN cen ON cen.g = gs.g AND cen.cat = cs.cat JOIN tots ON tots.g = gs.g), pr AS (SELECT a.g AS g_a, b.g AS g_b, a.n AS na, b.n AS nb, a.p AS pa, b.p AS pb FROM grid a JOIN grid b ON a.cat = b.cat WHERE a.g < b.g), s AS (SELECT g_a, g_b, CAST(SUM(CASE WHEN na > 0 OR nb > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_cats, SUM(abs(pa - pb)) AS l1, SUM(CAST(round((sqrt(CAST(pa AS DOUBLE)) - sqrt(CAST(pb AS DOUBLE))) * (sqrt(CAST(pa AS DOUBLE)) - sqrt(CAST(pb AS DOUBLE))), 9) AS DECIMAL(28,9))) AS h2, SUM(CAST(round(sqrt(CAST(pa AS DOUBLE) * CAST(pb AS DOUBLE)), 9) AS DECIMAL(28,9))) AS bc FROM pr GROUP BY 1, 2) SELECT g_a, g_b, n_cats, round(CAST(l1 AS DOUBLE) / 2.0, 6) AS tvd, round(sqrt(CAST(h2 AS DOUBLE) / 2.0), 6) AS hellinger, round(CAST(bc AS DOUBLE), 6) AS bc, CASE WHEN CAST(bc AS DOUBLE) > 0.0 THEN round(-ln(least(CAST(bc AS DOUBLE), 1.0)), 6) END AS b_dist FROM s ORDER BY g_a, g_b""",
-    // tau-b's census grid, tie masses carried doubled so /2 stays exact
-    "q566_gk_gamma" ->
-      """WITH src AS (SELECT CAST(substr(o_orderpriority, 1, 1) AS BIGINT) AS x, CASE WHEN o_totalprice < 50000 THEN 0 WHEN o_totalprice < 150000 THEN 1 WHEN o_totalprice < 300000 THEN 2 ELSE 3 END AS y FROM orders), cen AS (SELECT x, y, COUNT(*) AS c FROM src GROUP BY 1, 2), cd AS (SELECT SUM(CAST(a.c AS HUGEINT) * CAST(CASE WHEN b.y > a.y THEN b.c ELSE 0 END AS HUGEINT)) AS cc, SUM(CAST(a.c AS HUGEINT) * CAST(CASE WHEN b.y < a.y THEN b.c ELSE 0 END AS HUGEINT)) AS dd FROM cen a JOIN cen b ON b.x > a.x AND b.y <> a.y), m AS (SELECT CAST(SUM(c) AS HUGEINT) AS n, SUM(CAST(c AS HUGEINT) * (CAST(c AS HUGEINT) - 1)) AS tb2 FROM cen), tx AS (SELECT SUM(CAST(t AS HUGEINT) * (CAST(t AS HUGEINT) - 1)) AS tx2 FROM (SELECT SUM(c) AS t FROM cen GROUP BY x)), ty AS (SELECT SUM(CAST(t AS HUGEINT) * (CAST(t AS HUGEINT) - 1)) AS ty2 FROM (SELECT SUM(c) AS t FROM cen GROUP BY y)), f AS (SELECT CAST(n AS BIGINT) AS n, CAST(cc AS BIGINT) AS concordant, CAST(dd AS BIGINT) AS discordant, CAST((tx2 - tb2) // 2 AS BIGINT) AS tied_x_only, CAST((ty2 - tb2) // 2 AS BIGINT) AS tied_y_only, CAST(tb2 // 2 AS BIGINT) AS tied_both FROM cd, m, tx, ty) SELECT *, CASE WHEN concordant + discordant > 0 THEN round(CAST(concordant - discordant AS DOUBLE) / (CAST(concordant AS DOUBLE) + CAST(discordant AS DOUBLE)), 6) END AS gamma, CASE WHEN concordant + discordant + tied_y_only > 0 THEN round(CAST(concordant - discordant AS DOUBLE) / (CAST(concordant AS DOUBLE) + CAST(discordant AS DOUBLE) + CAST(tied_y_only AS DOUBLE)), 6) END AS somers_d_yx, CASE WHEN concordant + discordant + tied_x_only > 0 THEN round(CAST(concordant - discordant AS DOUBLE) / (CAST(concordant AS DOUBLE) + CAST(discordant AS DOUBLE) + CAST(tied_x_only AS DOUBLE)), 6) END AS somers_d_xy FROM f""",
-    // abundance census → frequency-of-frequencies, all-integer until the
-    // two final ratios
-    "q567_chao1" ->
-      s"""$HASH_MACROS; WITH w AS (SELECT source AS g, unnest(docwords(text)) AS w FROM documents), c AS (SELECT g, w, COUNT(*) AS c FROM w WHERE w <> '' GROUP BY 1, 2), a AS (SELECT g, COUNT(*) AS s_obs, CAST(SUM(c) AS BIGINT) AS n, CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS f1, CAST(SUM(CASE WHEN c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS f2 FROM c GROUP BY 1) SELECT g AS source, n AS n_tokens, CAST(s_obs AS BIGINT) AS s_obs, f1, f2, round(CAST(s_obs AS DOUBLE) + CAST(f1 AS DOUBLE) * (CAST(f1 AS DOUBLE) - 1.0) / (2.0 * (CAST(f2 AS DOUBLE) + 1.0)), 6) AS chao1, CASE WHEN n > 0 THEN round(1.0 - CAST(f1 AS DOUBLE) / CAST(n AS DOUBLE), 6) END AS coverage FROM a ORDER BY source""",
-    // q460's pinned Shannon terms + an exact integer sum of squares
-    "q568_hill_numbers" ->
-      """WITH c AS (SELECT event_type, user_id, COUNT(*) AS c FROM events GROUP BY 1, 2), t AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS richness, CAST(SUM(c) AS BIGINT) AS n, SUM(CAST(round(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE)), 9) AS DECIMAL(18,9))) AS clogc, SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS c2 FROM c GROUP BY 1) SELECT event_type, n, richness, round(exp(ln(CAST(n AS DOUBLE)) - CAST(clogc AS DOUBLE) / CAST(n AS DOUBLE)), 6) AS hill1, round(CAST(n AS DOUBLE) * CAST(n AS DOUBLE) / CAST(c2 AS DOUBLE), 6) AS hill2, CASE WHEN richness > 0 THEN round(exp(ln(CAST(n AS DOUBLE)) - CAST(clogc AS DOUBLE) / CAST(n AS DOUBLE)) / CAST(richness AS DOUBLE), 6) END AS evenness FROM t ORDER BY event_type""",
-    // the q564 hourly census split into rank thirds; SSE via the OLS
-    // orthogonality form over exact integer sums
-    "q569_goldfeld_quandt" ->
-      """WITH h AS (SELECT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id, COUNT(*) AS n FROM events GROUP BY 1, 2), b AS (SELECT event_type, hour_id AS x, CAST(n AS BIGINT) AS y, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hour_id) AS rn, COUNT(*) OVER (PARTITION BY event_type) AS nk FROM h), sg AS (SELECT event_type, x, y, CASE WHEN rn <= nk // 3 THEN 'lo' WHEN rn > nk - nk // 3 THEN 'hi' END AS seg FROM b WHERE nk // 3 >= 3), cen AS (SELECT event_type, seg, COUNT(*) AS n, CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy, CAST(SUM(x * x) AS BIGINT) AS sxx, CAST(SUM(x * y) AS BIGINT) AS sxy, CAST(SUM(y * y) AS BIGINT) AS syy, COUNT(DISTINCT x) AS nx FROM sg WHERE seg IS NOT NULL GROUP BY 1, 2), f0 AS (SELECT event_type, seg, n, sx, sy, sxy, syy, (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS b FROM cen WHERE nx >= 2), f1 AS (SELECT event_type, seg, n, b, (CAST(sy AS DOUBLE) - b * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE) AS a, sy, sxy, syy FROM f0), fit AS (SELECT event_type, seg, n, round(b, 6) AS slope, round(greatest(0.0, CAST(syy AS DOUBLE) - a * CAST(sy AS DOUBLE) - b * CAST(sxy AS DOUBLE)), 9) AS sse FROM f1), w AS (SELECT event_type, MAX(CASE WHEN seg = 'lo' THEN n END) AS n_lo, MAX(CASE WHEN seg = 'hi' THEN n END) AS n_hi, MAX(CASE WHEN seg = 'lo' THEN slope END) AS slope_lo, MAX(CASE WHEN seg = 'hi' THEN slope END) AS slope_hi, MAX(CASE WHEN seg = 'lo' THEN sse END) AS sse_lo, MAX(CASE WHEN seg = 'hi' THEN sse END) AS sse_hi FROM fit GROUP BY 1) SELECT event_type, n_lo, n_hi, slope_lo, slope_hi, sse_lo, sse_hi, CASE WHEN n_lo > 2 AND n_hi > 2 AND sse_lo > 0.0 THEN round((sse_hi / (CAST(n_hi AS DOUBLE) - 2.0)) / (sse_lo / (CAST(n_lo AS DOUBLE) - 2.0)), 6) END AS f_ratio FROM w ORDER BY event_type""",
-    // q288's scored frame; per-bin squared terms pinned at 1e-9 before
-    // the decimal sums
-    "q570_brier_decomp" ->
-      """WITH b0 AS (SELECT c_acctbal, CASE WHEN EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) THEN 1 ELSE 0 END AS pos FROM customer), mm AS (SELECT MIN(c_acctbal) AS blo, MAX(c_acctbal) AS bhi FROM b0), s AS (SELECT pos, CAST(round((c_acctbal - blo) / (bhi - blo), 6) AS DECIMAL(12,6)) AS score FROM b0, mm), r AS (SELECT pos, score, LEAST(CAST(floor(score * 10) AS BIGINT), 9) AS bin FROM s), bins AS (SELECT bin, COUNT(*) AS nk, CAST(SUM(pos) AS BIGINT) AS posk, SUM(score) AS psum, SUM(CAST(round((CAST(score AS DOUBLE) - CAST(pos AS DOUBLE)) * (CAST(score AS DOUBLE) - CAST(pos AS DOUBLE)), 9) AS DECIMAL(28,9))) AS sq FROM r GROUP BY 1), t AS (SELECT CAST(SUM(nk) AS BIGINT) AS n, CAST(SUM(posk) AS BIGINT) AS pos, SUM(sq) AS sqsum FROM bins), terms AS (SELECT t.n, t.pos, t.sqsum, CAST(round(CAST(nk AS DOUBLE) * (CAST(psum AS DOUBLE) / CAST(nk AS DOUBLE) - CAST(posk AS DOUBLE) / CAST(nk AS DOUBLE)) * (CAST(psum AS DOUBLE) / CAST(nk AS DOUBLE) - CAST(posk AS DOUBLE) / CAST(nk AS DOUBLE)), 9) AS DECIMAL(28,9)) AS rel_t, CAST(round(CAST(nk AS DOUBLE) * (CAST(posk AS DOUBLE) / CAST(nk AS DOUBLE) - CAST(t.pos AS DOUBLE) / CAST(t.n AS DOUBLE)) * (CAST(posk AS DOUBLE) / CAST(nk AS DOUBLE) - CAST(t.pos AS DOUBLE) / CAST(t.n AS DOUBLE)), 9) AS DECIMAL(28,9)) AS res_t FROM bins, t), f AS (SELECT n, pos, sqsum, CAST(COUNT(*) AS BIGINT) AS n_bins, SUM(rel_t) AS rel, SUM(res_t) AS res FROM terms GROUP BY 1, 2, 3) SELECT n, n_bins, round(CAST(sqsum AS DOUBLE) / CAST(n AS DOUBLE), 6) AS brier, round(CAST(rel AS DOUBLE) / CAST(n AS DOUBLE), 6) AS reliability, round(CAST(res AS DOUBLE) / CAST(n AS DOUBLE), 6) AS resolution, round((CAST(pos AS DOUBLE) / CAST(n AS DOUBLE)) * (1.0 - CAST(pos AS DOUBLE) / CAST(n AS DOUBLE)), 6) AS uncertainty, round(CAST(rel AS DOUBLE) / CAST(n AS DOUBLE) - CAST(res AS DOUBLE) / CAST(n AS DOUBLE) + (CAST(pos AS DOUBLE) / CAST(n AS DOUBLE)) * (1.0 - CAST(pos AS DOUBLE) / CAST(n AS DOUBLE)), 6) AS brier_decomp FROM f""",
-    // q564's census prefix; slope/intercept pinned at 1e-9 before the
-    // per-point leverage/influence arithmetic
-    "q571_cooks_distance" ->
-      """WITH h AS (SELECT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id, COUNT(*) AS n FROM events GROUP BY 1, 2), b AS (SELECT event_type, hour_id AS x, CAST(n AS BIGINT) AS y FROM h), cen AS (SELECT event_type, COUNT(*) AS n, CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy, CAST(SUM(x * x) AS BIGINT) AS sxx, CAST(SUM(x * y) AS BIGINT) AS sxy, CAST(SUM(y * y) AS BIGINT) AS syy, COUNT(DISTINCT x) AS nx FROM b GROUP BY 1), f0 AS (SELECT *, (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS br FROM cen WHERE nx >= 2 AND n >= 4), f1 AS (SELECT *, (CAST(sy AS DOUBLE) - br * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE) AS ar FROM f0), fit AS (SELECT event_type, n, round(br, 9) AS slope, round(ar, 9) AS icept, round(greatest(0.0, CAST(syy AS DOUBLE) - ar * CAST(sy AS DOUBLE) - br * CAST(sxy AS DOUBLE)), 9) AS sse, CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS xbar, CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) AS sxx_c FROM f1), r AS (SELECT b.event_type, b.x, b.y, fit.n, round(CAST(b.y AS DOUBLE) - (fit.icept + fit.slope * CAST(b.x AS DOUBLE)), 9) AS e, 1.0 / CAST(fit.n AS DOUBLE) + (CAST(b.x AS DOUBLE) - fit.xbar) * (CAST(b.x AS DOUBLE) - fit.xbar) / fit.sxx_c AS hl, fit.sse / (CAST(fit.n AS DOUBLE) - 2.0) AS s2, fit.sse AS sse FROM b JOIN fit ON b.event_type = fit.event_type) SELECT event_type, x, y, n, e AS resid, round(hl, 6) AS leverage, CASE WHEN sse > 0.0 AND hl < 1.0 THEN round(e / sqrt(s2 * (1.0 - hl)), 6) END AS r_student, CASE WHEN sse > 0.0 AND hl < 1.0 THEN round(e * e * hl / (2.0 * s2 * (1.0 - hl) * (1.0 - hl)), 6) END AS cooks_d, CASE WHEN sse > 0.0 AND hl < 1.0 THEN (e * e * hl / (2.0 * s2 * (1.0 - hl) * (1.0 - hl)) > 4.0 / CAST(n AS DOUBLE)) END AS influential FROM r ORDER BY event_type, x""",
-    // the hash-sampled 2×2 replayed: pinned per-integer ln-factorial
-    // sums (never lgamma), log-pmf on the 1e-9 grid, pmf on 1e-12,
-    // decimal tail sums — both engines walk identical tables
-    "q574_fisher_exact" ->
-      """WITH samp AS (SELECT event_type, event_id FROM events ORDER BY md5(concat('fx:', CAST(event_id AS VARCHAR))) LIMIT 200), rws AS (SELECT CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS cv, CAST(concat('0x', substr(md5(concat('fa:', CAST(event_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 AS arm FROM samp), cl AS (SELECT CAST(SUM(CASE WHEN arm = 0 THEN cv ELSE 0 END) AS BIGINT) AS a, CAST(SUM(CASE WHEN arm = 0 THEN 1 - cv ELSE 0 END) AS BIGINT) AS b, CAST(SUM(CASE WHEN arm = 1 THEN cv ELSE 0 END) AS BIGINT) AS c, CAST(SUM(CASE WHEN arm = 1 THEN 1 - cv ELSE 0 END) AS BIGINT) AS d FROM rws), dims AS (SELECT a, b, c, d, a + b AS r1, c + d AS r2, a + c AS c1, a + b + c + d AS nn FROM cl), ix AS (SELECT CAST(unnest(range(0, (SELECT nn FROM dims) + 1)) AS BIGINT) AS i), lft AS MATERIALIZED (SELECT i, CAST(SUM(CASE WHEN i >= 2 THEN CAST(round(ln(CAST(i AS DOUBLE)), 12) AS DECIMAL(28,12)) ELSE CAST(0 AS DECIMAL(28,12)) END) OVER (ORDER BY i ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DECIMAL(28,12)) AS lf FROM ix), supp AS (SELECT CAST(unnest(range(greatest(0, (SELECT c1 - r2 FROM dims)), least((SELECT r1 FROM dims), (SELECT c1 FROM dims)) + 1)) AS BIGINT) AS k), pk AS (SELECT s.k, d.a, d.b, d.c, d.d, CAST(l1.lf + l2.lf + l3.lf + l4.lf - l5.lf - l6.lf - l7.lf - l8.lf - l9.lf AS DOUBLE) AS lnp FROM supp s, dims d JOIN lft l1 ON l1.i = d.r1 JOIN lft l2 ON l2.i = d.r2 JOIN lft l3 ON l3.i = d.c1 JOIN lft l4 ON l4.i = d.nn - d.c1 JOIN lft l5 ON l5.i = d.nn JOIN lft l6 ON l6.i = s.k JOIN lft l7 ON l7.i = d.r1 - s.k JOIN lft l8 ON l8.i = d.c1 - s.k JOIN lft l9 ON l9.i = d.r2 - d.c1 + s.k), pm AS (SELECT k, a, b, c, d, CAST(round(exp(round(lnp, 9)), 12) AS DECIMAL(16,12)) AS pmf FROM pk), obs AS (SELECT CAST(pmf AS DOUBLE) AS pobs FROM pm WHERE k = a), f AS (SELECT a, b, c, d, SUM(CASE WHEN CAST(pmf AS DOUBLE) <= (SELECT pobs FROM obs) * (1.0 + 1e-7) THEN pmf END) AS s_two, SUM(CASE WHEN k <= a THEN pmf END) AS s_less, SUM(CASE WHEN k >= a THEN pmf END) AS s_greater FROM pm GROUP BY 1, 2, 3, 4) SELECT a, b, c, d, CASE WHEN b * c > 0 THEN round(CAST(a AS DOUBLE) * CAST(d AS DOUBLE) / (CAST(b AS DOUBLE) * CAST(c AS DOUBLE)), 6) END AS odds_ratio, round(least(1.0, CAST(s_less AS DOUBLE)), 9) AS p_less, round(least(1.0, CAST(s_greater AS DOUBLE)), 9) AS p_greater, round(least(1.0, CAST(s_two AS DOUBLE)), 9) AS p_two FROM f""",
-    // one (group, exposure) census; IRR point estimate carries exposure,
-    // the Poisson CI carries counts alone
-    "q575_incidence_rates" ->
-      """WITH h AS (SELECT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id FROM events), cen AS (SELECT event_type AS g, COUNT(*) AS n, CAST(COUNT(DISTINCT hour_id) AS BIGINT) AS h FROM h GROUP BY 1), base AS (SELECT n AS n0, h AS h0 FROM cen WHERE g = 'view'), x AS (SELECT g, n, h, CAST(n AS DOUBLE) / CAST(h AS DOUBLE) AS rate, CAST(n0 AS DOUBLE) / CAST(h0 AS DOUBLE) AS rate0, n0 FROM cen, base WHERE g <> 'view'), y AS (SELECT g, n, h, rate, rate0, round(ln(rate / rate0), 9) AS lirr, round(sqrt(1.0 / CAST(n AS DOUBLE) + 1.0 / CAST(n0 AS DOUBLE)), 9) AS se, (n > 0 AND n0 > 0) AS ok FROM x) SELECT g AS event_type, n, h AS exposure, round(rate, 6) AS rate, CASE WHEN ok THEN round(rate / rate0, 6) END AS irr, CASE WHEN ok THEN round(exp(lirr - 1.96 * se), 6) END AS irr_lo, CASE WHEN ok THEN round(exp(lirr + 1.96 * se), 6) END AS irr_hi, CASE WHEN ok THEN round(lirr / se, 6) END AS z FROM y ORDER BY event_type""",
-    // q100's unrolled-iteration style: x ← 1 + α·Aᵀx, contributions on
-    // the 1e-9 decimal grid per round
-    "q576_katz_centrality" ->
-      """WITH pairs AS (SELECT DISTINCT o_custkey AS cust, l_suppkey AS supp FROM lineitem JOIN orders ON l_orderkey = o_orderkey), edges AS (SELECT cust AS src, -supp AS dst FROM pairs UNION ALL SELECT -supp AS src, cust AS dst FROM pairs), nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges), x0 AS (SELECT node, CAST(1.0 AS DOUBLE) AS katz FROM nodes), it1 AS (SELECT e.dst AS node, SUM(CAST(p.katz * 0.05 AS DECIMAL(28,9))) AS c FROM edges e JOIN x0 p ON e.src = p.node GROUP BY 1), x1 AS (SELECT n.node, 1.0 + COALESCE(CAST(i.c AS DOUBLE), 0.0) AS katz FROM nodes n LEFT JOIN it1 i ON n.node = i.node), it2 AS (SELECT e.dst AS node, SUM(CAST(p.katz * 0.05 AS DECIMAL(28,9))) AS c FROM edges e JOIN x1 p ON e.src = p.node GROUP BY 1), x2 AS (SELECT n.node, 1.0 + COALESCE(CAST(i.c AS DOUBLE), 0.0) AS katz FROM nodes n LEFT JOIN it2 i ON n.node = i.node), it3 AS (SELECT e.dst AS node, SUM(CAST(p.katz * 0.05 AS DECIMAL(28,9))) AS c FROM edges e JOIN x2 p ON e.src = p.node GROUP BY 1), x3 AS (SELECT n.node, 1.0 + COALESCE(CAST(i.c AS DOUBLE), 0.0) AS katz FROM nodes n LEFT JOIN it3 i ON n.node = i.node) SELECT node, round(katz, 6) AS katz FROM x3 ORDER BY katz DESC, node LIMIT 100""",
-    // three regexp censuses per doc, the vowel-group syllable proxy
-    "q577_readability" ->
-      s"""$HASH_MACROS; SELECT doc_id, CAST(len(docwords(text)) AS BIGINT) AS n_words, CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+'))) AS BIGINT) AS n_sentences, CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT) AS n_syllables, CASE WHEN len(docwords(text)) > 0 THEN round(206.835 - 1.015 * (CAST(len(docwords(text)) AS DOUBLE) / CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+'))) AS DOUBLE)) - 84.6 * (CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS DOUBLE) / CAST(len(docwords(text)) AS DOUBLE)), 6) END AS flesch, CASE WHEN len(docwords(text)) > 0 THEN round(0.39 * (CAST(len(docwords(text)) AS DOUBLE) / CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+'))) AS DOUBLE)) + 11.8 * (CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS DOUBLE) / CAST(len(docwords(text)) AS DOUBLE)) - 15.59, 6) END AS fk_grade FROM documents ORDER BY doc_id""",
-    // paired first/last census; the k=3 closed-form 2×2 inverse on
-    // exact integers
-    "q578_stuart_maxwell" ->
-      """WITH r AS (SELECT user_id, event_type, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS ra, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rd FROM events), fl AS (SELECT user_id, MAX(CASE WHEN ra = 1 THEN event_type END) AS ft, MAX(CASE WHEN rd = 1 THEN event_type END) AS lt FROM r GROUP BY 1), bk AS (SELECT CASE WHEN ft IN ('click', 'view') THEN 'engage' WHEN ft IN ('purchase', 'signup') THEN 'convert' ELSE 'error' END AS b, CASE WHEN lt IN ('click', 'view') THEN 'engage' WHEN lt IN ('purchase', 'signup') THEN 'convert' ELSE 'error' END AS a FROM fl), cen AS (SELECT b, a, COUNT(*) AS n FROM bk GROUP BY 1, 2), cats AS (SELECT cat, ROW_NUMBER() OVER (ORDER BY cat) AS r FROM (SELECT b AS cat FROM cen UNION SELECT a FROM cen)), rk AS (SELECT cen.n, cb.r AS rb, ca.r AS rc FROM cen JOIN cats cb ON cen.b = cb.cat JOIN cats ca ON cen.a = ca.cat), ag AS (SELECT CAST(SUM(n) AS BIGINT) AS nn, SUM(CASE WHEN rb = 1 THEN n ELSE 0 END) AS row1, SUM(CASE WHEN rb = 2 THEN n ELSE 0 END) AS row2, SUM(CASE WHEN rc = 1 THEN n ELSE 0 END) AS col1, SUM(CASE WHEN rc = 2 THEN n ELSE 0 END) AS col2, SUM(CASE WHEN rb = 1 AND rc = 1 THEN n ELSE 0 END) AS n11, SUM(CASE WHEN rb = 2 AND rc = 2 THEN n ELSE 0 END) AS n22, SUM(CASE WHEN rb = 1 AND rc = 2 THEN n ELSE 0 END) AS n12, SUM(CASE WHEN rb = 2 AND rc = 1 THEN n ELSE 0 END) AS n21 FROM rk), nm AS (SELECT MAX(CASE WHEN r = 1 THEN cat END) AS cat1, MAX(CASE WHEN r = 2 THEN cat END) AS cat2, CAST(COUNT(*) AS BIGINT) AS n_cats FROM cats), x AS (SELECT nn, n_cats, cat1, cat2, row1, row2, col1, col2, CAST(row1 + col1 - 2 * n11 AS DOUBLE) AS v11, CAST(row2 + col2 - 2 * n22 AS DOUBLE) AS v22, -CAST(n12 + n21 AS DOUBLE) AS v12, CAST(row1 - col1 AS DOUBLE) AS d1d, CAST(row2 - col2 AS DOUBLE) AS d2d FROM ag, nm) SELECT nn AS n, n_cats, cat1, cat2, CAST(row1 - col1 AS BIGINT) AS d1, CAST(row2 - col2 AS BIGINT) AS d2, CASE WHEN n_cats = 3 AND v11 * v22 - v12 * v12 > 0.0 THEN round((d1d * d1d * v22 - 2.0 * d1d * d2d * v12 + d2d * d2d * v11) / (v11 * v22 - v12 * v12), 6) END AS chi2 FROM x""",
-    // the unordered pair fold of the paired census, terms pinned at 1e-9
-    "q580_bowker" ->
-      """WITH r AS (SELECT user_id, event_type, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS ra, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rd FROM events), fl AS (SELECT user_id, MAX(CASE WHEN ra = 1 THEN event_type END) AS b, MAX(CASE WHEN rd = 1 THEN event_type END) AS a FROM r GROUP BY 1), cen AS (SELECT b, a, COUNT(*) AS n FROM fl GROUP BY 1, 2), tot AS (SELECT CAST(SUM(n) AS BIGINT) AS nn FROM cen), cats AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_cats FROM (SELECT b AS cat FROM cen UNION SELECT a FROM cen)), pr AS (SELECT least(b, a) AS lo, greatest(b, a) AS hi, SUM(CASE WHEN b < a THEN n ELSE 0 END) AS nij, SUM(CASE WHEN b > a THEN n ELSE 0 END) AS nji FROM cen WHERE b <> a GROUP BY 1, 2), ag AS (SELECT CAST(COALESCE(SUM(CASE WHEN nij + nji > 0 THEN CAST(round((CAST(nij AS DOUBLE) - CAST(nji AS DOUBLE)) * (CAST(nij AS DOUBLE) - CAST(nji AS DOUBLE)) / (CAST(nij AS DOUBLE) + CAST(nji AS DOUBLE)), 9) AS DECIMAL(28,9)) END), 0) AS DECIMAL(28,9)) AS chi2s, CAST(COALESCE(SUM(CASE WHEN nij + nji > 0 THEN 1 ELSE 0 END), 0) AS BIGINT) AS df FROM pr) SELECT nn AS n, n_cats, df, round(CAST(chi2s AS DOUBLE), 6) AS chi2 FROM ag, tot, cats""",
-    // observed disagreement over the census, expected over the FULL
-    // margin grid, weights pinned at 1e-9
-    "q581_weighted_kappa" ->
-      s"""$HASH_MACROS; WITH d0 AS (SELECT length(text) // 120 AS c1, len(docwords(text)) AS w FROM documents), r AS (SELECT least(4, c1) AS i, least(4, w // 20) AS j FROM d0), cen AS (SELECT i, j, COUNT(*) AS n FROM r GROUP BY 1, 2), obs AS (SELECT CAST(SUM(n) AS BIGINT) AS nn, CAST(SUM(CASE WHEN i = j THEN n ELSE 0 END) AS BIGINT) AS agree, SUM(CAST(round(abs(i - j) / 4.0, 9) * CAST(n AS DOUBLE) AS DECIMAL(38,9))) AS ol, SUM(CAST(round(abs(i - j) / 4.0 * (abs(i - j) / 4.0), 9) * CAST(n AS DOUBLE) AS DECIMAL(38,9))) AS oq FROM cen), ri AS (SELECT i, SUM(n) AS r FROM cen GROUP BY 1), cj AS (SELECT j, SUM(n) AS c FROM cen GROUP BY 1), ex AS (SELECT SUM(CAST(round(abs(i - j) / 4.0, 9) * CAST(r AS DOUBLE) * CAST(c AS DOUBLE) AS DECIMAL(38,9))) AS el, SUM(CAST(round(abs(i - j) / 4.0 * (abs(i - j) / 4.0), 9) * CAST(r AS DOUBLE) * CAST(c AS DOUBLE) AS DECIMAL(38,9))) AS eq FROM ri, cj) SELECT nn AS n, CAST(5 AS INTEGER) AS k, round(CAST(agree AS DOUBLE) / CAST(nn AS DOUBLE), 6) AS po, CASE WHEN CAST(el AS DOUBLE) > 0.0 THEN round(1.0 - CAST(nn AS DOUBLE) * CAST(ol AS DOUBLE) / CAST(el AS DOUBLE), 6) END AS kappa_linear, CASE WHEN CAST(eq AS DOUBLE) > 0.0 THEN round(1.0 - CAST(nn AS DOUBLE) * CAST(oq AS DOUBLE) / CAST(eq AS DOUBLE), 6) END AS kappa_quadratic FROM obs, ex""",
-    // pooled + half censuses at the median rank, q569's SSE discipline
-    "q582_chow_test" ->
-      """WITH h AS (SELECT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id, COUNT(*) AS n FROM events GROUP BY 1, 2), b AS (SELECT event_type, hour_id AS x, CAST(n AS BIGINT) AS y, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hour_id) AS rn, COUNT(*) OVER (PARTITION BY event_type) AS nk FROM h), sg AS (SELECT event_type, x, y, CASE WHEN rn <= nk // 2 THEN 1 ELSE 2 END AS seg FROM b WHERE nk // 2 >= 3), cp AS (SELECT event_type, COUNT(*) AS n, CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy, CAST(SUM(x * x) AS BIGINT) AS sxx, CAST(SUM(x * y) AS BIGINT) AS sxy, CAST(SUM(y * y) AS BIGINT) AS syy, COUNT(DISTINCT x) AS nx FROM sg GROUP BY 1), fp AS (SELECT event_type, n, round(greatest(0.0, CAST(syy AS DOUBLE) - ((CAST(sy AS DOUBLE) - ((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))) * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE)) * CAST(sy AS DOUBLE) - ((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))) * CAST(sxy AS DOUBLE)), 9) AS sse_pooled FROM cp WHERE nx >= 2), ch AS (SELECT event_type, seg, COUNT(*) AS n, CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy, CAST(SUM(x * x) AS BIGINT) AS sxx, CAST(SUM(x * y) AS BIGINT) AS sxy, CAST(SUM(y * y) AS BIGINT) AS syy, COUNT(DISTINCT x) AS nx FROM sg GROUP BY 1, 2), f0 AS (SELECT event_type, seg, n, sx, sy, sxy, syy, (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS bb FROM ch WHERE nx >= 2), fh AS (SELECT event_type, seg, n, round(bb, 6) AS sl, round(greatest(0.0, CAST(syy AS DOUBLE) - ((CAST(sy AS DOUBLE) - bb * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE)) * CAST(sy AS DOUBLE) - bb * CAST(sxy AS DOUBLE)), 9) AS sseh FROM f0), w AS (SELECT event_type, MAX(CASE WHEN seg = 1 THEN n END) AS n1, MAX(CASE WHEN seg = 2 THEN n END) AS n2, MAX(CASE WHEN seg = 1 THEN sl END) AS slope1, MAX(CASE WHEN seg = 2 THEN sl END) AS slope2, MAX(CASE WHEN seg = 1 THEN sseh END) AS sse1, MAX(CASE WHEN seg = 2 THEN sseh END) AS sse2 FROM fh GROUP BY 1) SELECT fp.event_type, fp.n, w.n1, w.n2, w.slope1, w.slope2, fp.sse_pooled, round(w.sse1 + w.sse2, 9) AS sse_split, CASE WHEN w.n1 IS NOT NULL AND w.n2 IS NOT NULL AND fp.n > 4 AND w.sse1 + w.sse2 > 0.0 THEN round((greatest(0.0, fp.sse_pooled - (w.sse1 + w.sse2)) / 2.0) / ((w.sse1 + w.sse2) / (CAST(fp.n AS DOUBLE) - 4.0)), 6) END AS f_stat FROM fp JOIN w ON fp.event_type = w.event_type ORDER BY fp.event_type""",
-    // one (group, stratum) census; weight terms pinned at 1e-9 before
-    // the decimal sums
-    "q583_direct_standardization" ->
-      """WITH r AS (SELECT CAST(concat('0x', substr(md5(concat('ds:', CAST(event_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 AS arm, (epoch_ns(ts) // 1000000000 // 3600) % 24 AS hod, CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS e FROM events), cen AS (SELECT CAST(arm AS VARCHAR) AS g, CAST(hod AS BIGINT) AS s, COUNT(*) AS n, CAST(SUM(e) AS BIGINT) AS ev FROM r GROUP BY 1, 2), std AS (SELECT s, CAST(SUM(n) AS BIGINT) AS ns, CAST(SUM(ev) AS BIGINT) AS es FROM cen GROUP BY 1), j AS (SELECT cen.g, cen.n, cen.ev, std.ns, std.es FROM cen JOIN std ON cen.s = std.s), t AS (SELECT g, CAST(SUM(n) AS BIGINT) AS n, CAST(SUM(ev) AS BIGINT) AS events, CAST(SUM(ns) AS BIGINT) AS wsum, SUM(CAST(round(CAST(ns AS DOUBLE) * (CAST(ev AS DOUBLE) / CAST(n AS DOUBLE)), 9) AS DECIMAL(28,9))) AS dirs, SUM(CAST(round(CAST(n AS DOUBLE) * (CAST(es AS DOUBLE) / CAST(ns AS DOUBLE)), 9) AS DECIMAL(28,9))) AS expected FROM j GROUP BY 1) SELECT g AS cohort, n, events, round(CAST(events AS DOUBLE) / CAST(n AS DOUBLE), 6) AS crude_rate, round(CAST(dirs AS DOUBLE) / CAST(wsum AS DOUBLE), 6) AS std_rate, CASE WHEN CAST(expected AS DOUBLE) > 0.0 THEN round(CAST(events AS DOUBLE) / CAST(expected AS DOUBLE), 6) END AS smr FROM t ORDER BY cohort""",
-    // q330's threshold census, the prevalence-robust metric block
-    "q584_classifier_suite" ->
-      """WITH a AS (SELECT CAST(SUM(CASE WHEN o_orderstatus = 'F' AND CAST(o_totalprice AS DOUBLE) >= 150000.0 THEN 1 ELSE 0 END) AS BIGINT) AS tp, CAST(SUM(CASE WHEN o_orderstatus <> 'F' AND CAST(o_totalprice AS DOUBLE) >= 150000.0 THEN 1 ELSE 0 END) AS BIGINT) AS fp, CAST(SUM(CASE WHEN o_orderstatus = 'F' AND CAST(o_totalprice AS DOUBLE) < 150000.0 THEN 1 ELSE 0 END) AS BIGINT) AS fn, CAST(SUM(CASE WHEN o_orderstatus <> 'F' AND CAST(o_totalprice AS DOUBLE) < 150000.0 THEN 1 ELSE 0 END) AS BIGINT) AS tn FROM orders) SELECT tp, fp, fn, tn, round((CAST(tp AS DOUBLE) + CAST(tn AS DOUBLE)) / CAST(tp + fp + fn + tn AS DOUBLE), 6) AS accuracy, round(CAST(tp + fn AS DOUBLE) / CAST(tp + fp + fn + tn AS DOUBLE), 6) AS prevalence, CASE WHEN CAST(tp + fp AS DOUBLE) * CAST(tp + fn AS DOUBLE) * CAST(tn + fp AS DOUBLE) * CAST(tn + fn AS DOUBLE) > 0.0 THEN round((CAST(tp AS DOUBLE) * CAST(tn AS DOUBLE) - CAST(fp AS DOUBLE) * CAST(fn AS DOUBLE)) / sqrt(CAST(tp + fp AS DOUBLE) * CAST(tp + fn AS DOUBLE) * CAST(tn + fp AS DOUBLE) * CAST(tn + fn AS DOUBLE)), 6) END AS mcc, CASE WHEN tp + fn > 0 AND tn + fp > 0 THEN round(CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) + CAST(tn AS DOUBLE) / CAST(tn + fp AS DOUBLE) - 1.0, 6) END AS youden_j, CASE WHEN tp + fn > 0 AND tn + fp > 0 THEN round((CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) + CAST(tn AS DOUBLE) / CAST(tn + fp AS DOUBLE)) / 2.0, 6) END AS balanced_acc, CASE WHEN tn + fp > 0 THEN round(CAST(tn AS DOUBLE) / CAST(tn + fp AS DOUBLE), 6) END AS specificity, CASE WHEN tn + fn > 0 THEN round(CAST(tn AS DOUBLE) / CAST(tn + fn AS DOUBLE), 6) END AS npv, CASE WHEN tp + fp > 0 AND tp + fn > 0 AND 4.0 * (CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE)) + CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE) > 0.0 THEN round(5.0 * (CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE)) * (CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE)) / (4.0 * (CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE)) + CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE)), 6) END AS f2 FROM a""",
-    // q179's rolling-hash cut replay over the hexified payload, with
-    // the document-frequency stop-chunk cap
-    "q586_blob_chunk_pairs" ->
-      s"""$HASH_MACROS; WITH d0 AS (SELECT doc_id, hex(encode(text)) AS t FROM documents), d AS (SELECT doc_id, t, length(t) AS n FROM d0 WHERE length(t) >= 1), cuts AS (SELECT doc_id, t, list_sort(list_distinct(list_append(CASE WHEN n >= 16 THEN list_filter(list_transform(range(16, n + 1), cp -> CASE WHEN (xshash(substr(t, cp - 15, 16)) & 63) = 0 THEN CAST(cp AS BIGINT) END), x -> x IS NOT NULL) ELSE CAST([] AS BIGINT[]) END, CAST(n AS BIGINT)))) AS b FROM d), ch AS (SELECT doc_id, t, unnest(list_transform(range(1, len(b) + 1), k -> {'st': CASE WHEN k = 1 THEN CAST(1 AS BIGINT) ELSE b[k - 1] + 1 END, 'en': b[k]})) AS c FROM cuts), hs AS (SELECT DISTINCT doc_id, md5(substr(t, CAST(c.st AS INTEGER), CAST(c.en - c.st + 1 AS INTEGER))) AS h FROM ch), dfq AS (SELECT h, COUNT(*) AS nd FROM hs GROUP BY 1), kept AS (SELECT hs.doc_id, hs.h FROM hs JOIN dfq USING (h) WHERE nd <= 50), sz AS (SELECT doc_id, COUNT(*) AS nc FROM kept GROUP BY 1), pr AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(COUNT(*) AS BIGINT) AS shared_chunks FROM kept a JOIN kept b ON a.h = b.h AND a.doc_id < b.doc_id GROUP BY 1, 2), j AS (SELECT pr.id_a, pr.id_b, pr.shared_chunks, CAST(sa.nc AS BIGINT) AS n_a, CAST(sb.nc AS BIGINT) AS n_b FROM pr JOIN sz sa ON sa.doc_id = pr.id_a JOIN sz sb ON sb.doc_id = pr.id_b) SELECT id_a, id_b, shared_chunks, n_a, n_b, round(CAST(shared_chunks AS DOUBLE) / CAST(least(n_a, n_b) AS DOUBLE), 6) AS containment FROM j WHERE shared_chunks >= 2 AND CAST(shared_chunks AS DOUBLE) / CAST(least(n_a, n_b) AS DOUBLE) >= 0.5 ORDER BY id_a, id_b""",
-    // replace-shrinkage marker censuses, integer dot/norms, one cosine
-    "q587_stylometry" ->
-      """WITH p AS (SELECT source AS g, ' ' || lower(text) || ' ' AS t FROM documents), m AS (SELECT g, CAST(SUM((length(t) - length(replace(t, ' the ', ' '))) // 4) AS BIGINT) AS m0, CAST(SUM((length(t) - length(replace(t, ' a ', ' '))) // 2) AS BIGINT) AS m1, CAST(SUM((length(t) - length(replace(t, ' and ', ' '))) // 4) AS BIGINT) AS m2, CAST(SUM((length(t) - length(replace(t, ' of ', ' '))) // 3) AS BIGINT) AS m3, CAST(SUM((length(t) - length(replace(t, ' to ', ' '))) // 3) AS BIGINT) AS m4, CAST(SUM((length(t) - length(replace(t, ' in ', ' '))) // 3) AS BIGINT) AS m5, CAST(SUM((length(t) - length(replace(t, ' is ', ' '))) // 3) AS BIGINT) AS m6, CAST(SUM((length(t) - length(replace(t, ' it ', ' '))) // 3) AS BIGINT) AS m7, CAST(SUM((length(t) - length(replace(t, ' that ', ' '))) // 5) AS BIGINT) AS m8, CAST(SUM((length(t) - length(replace(t, ' for ', ' '))) // 4) AS BIGINT) AS m9 FROM p GROUP BY 1), mm AS (SELECT g, 0 AS marker, m0 AS cnt FROM m UNION ALL SELECT g, 1, m1 FROM m UNION ALL SELECT g, 2, m2 FROM m UNION ALL SELECT g, 3, m3 FROM m UNION ALL SELECT g, 4, m4 FROM m UNION ALL SELECT g, 5, m5 FROM m UNION ALL SELECT g, 6, m6 FROM m UNION ALL SELECT g, 7, m7 FROM m UNION ALL SELECT g, 8, m8 FROM m UNION ALL SELECT g, 9, m9 FROM m), nr AS (SELECT g, SUM(CAST(cnt AS HUGEINT) * CAST(cnt AS HUGEINT)) AS nrm2, CAST(SUM(cnt) AS BIGINT) AS total FROM mm GROUP BY 1), dt AS (SELECT a.g AS g_a, b.g AS g_b, SUM(CAST(a.cnt AS HUGEINT) * CAST(b.cnt AS HUGEINT)) AS dot FROM mm a JOIN mm b ON a.marker = b.marker AND a.g < b.g GROUP BY 1, 2) SELECT g_a, g_b, na.total AS tot_a, nb.total AS tot_b, CASE WHEN CAST(na.nrm2 AS DOUBLE) > 0.0 AND CAST(nb.nrm2 AS DOUBLE) > 0.0 THEN round(CAST(dot AS DOUBLE) / (sqrt(CAST(na.nrm2 AS DOUBLE)) * sqrt(CAST(nb.nrm2 AS DOUBLE))), 6) END AS style_cosine FROM dt JOIN nr na ON na.g = dt.g_a JOIN nr nb ON nb.g = dt.g_b ORDER BY g_a, g_b""",
-    // classic common-mean ACF with exact lag sums, then the DL ladder
-    "q588_pacf" ->
-      """WITH h AS (SELECT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id, COUNT(*) AS n FROM events GROUP BY 1, 2), b AS (SELECT event_type, CAST(n AS BIGINT) AS v, LEAD(CAST(n AS BIGINT), 1) OVER w AS w1, LEAD(CAST(n AS BIGINT), 2) OVER w AS w2, LEAD(CAST(n AS BIGINT), 3) OVER w AS w3 FROM h WINDOW w AS (PARTITION BY event_type ORDER BY hour_id)), cen AS (SELECT event_type, COUNT(*) AS n, CAST(SUM(v) AS BIGINT) AS sv, CAST(SUM(v * v) AS BIGINT) AS svv, CAST(SUM(CASE WHEN w1 IS NOT NULL THEN v * w1 ELSE 0 END) AS BIGINT) AS svw1, CAST(SUM(CASE WHEN w1 IS NOT NULL THEN v ELSE 0 END) AS BIGINT) AS sh1, CAST(SUM(COALESCE(w1, 0)) AS BIGINT) AS st1, CAST(SUM(CASE WHEN w1 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS nk1, CAST(SUM(CASE WHEN w2 IS NOT NULL THEN v * w2 ELSE 0 END) AS BIGINT) AS svw2, CAST(SUM(CASE WHEN w2 IS NOT NULL THEN v ELSE 0 END) AS BIGINT) AS sh2, CAST(SUM(COALESCE(w2, 0)) AS BIGINT) AS st2, CAST(SUM(CASE WHEN w2 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS nk2, CAST(SUM(CASE WHEN w3 IS NOT NULL THEN v * w3 ELSE 0 END) AS BIGINT) AS svw3, CAST(SUM(CASE WHEN w3 IS NOT NULL THEN v ELSE 0 END) AS BIGINT) AS sh3, CAST(SUM(COALESCE(w3, 0)) AS BIGINT) AS st3, CAST(SUM(CASE WHEN w3 IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS nk3 FROM b GROUP BY 1 HAVING COUNT(*) >= 4), st AS (SELECT event_type, n, round((CAST(svw1 AS DOUBLE) - (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sh1 AS DOUBLE) + CAST(st1 AS DOUBLE)) + CAST(nk1 AS DOUBLE) * (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE))) / (CAST(svv AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)), 9) AS r1, round((CAST(svw2 AS DOUBLE) - (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sh2 AS DOUBLE) + CAST(st2 AS DOUBLE)) + CAST(nk2 AS DOUBLE) * (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE))) / (CAST(svv AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)), 9) AS r2, round((CAST(svw3 AS DOUBLE) - (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sh3 AS DOUBLE) + CAST(st3 AS DOUBLE)) + CAST(nk3 AS DOUBLE) * (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sv AS DOUBLE) / CAST(n AS DOUBLE))) / (CAST(svv AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE) / CAST(n AS DOUBLE)), 9) AS r3 FROM cen WHERE CAST(svv AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE) / CAST(n AS DOUBLE) > 0.0), f AS (SELECT *, 1.0 - r1 * r1 AS p22den, CASE WHEN 1.0 - r1 * r1 <> 0.0 THEN (r2 - r1 * r1) / (1.0 - r1 * r1) END AS p22 FROM st), f2 AS (SELECT *, r1 - p22 * r1 AS p21 FROM f), f3 AS (SELECT *, 1.0 - p21 * r1 - p22 * r2 AS p33den FROM f2) SELECT event_type, n, r1, r2, r3, round(r1, 6) AS pacf1, CASE WHEN p22den <> 0.0 THEN round(p22, 6) END AS pacf2, CASE WHEN p22den <> 0.0 AND p33den <> 0.0 THEN round((r3 - p21 * r2 - p22 * r1) / p33den, 6) END AS pacf3 FROM f3 ORDER BY event_type""",
-    // daily-max census → two exact moments → the MoM fit, with the
-    // Gumbel constants interpolated as identical double literals
-    "q589_gumbel_maxima" ->
-      s"""WITH h AS (SELECT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id, COUNT(*) AS n FROM events GROUP BY 1, 2), blk AS (SELECT event_type, hour_id // 24 AS blk, CAST(MAX(n) AS BIGINT) AS m FROM h GROUP BY 1, 2), cen AS (SELECT event_type, COUNT(*) AS n_blocks, CAST(MAX(m) AS BIGINT) AS max_obs, CAST(SUM(m) AS BIGINT) AS sm, CAST(SUM(m * m) AS BIGINT) AS smm FROM blk GROUP BY 1 HAVING COUNT(*) >= 3), f AS (SELECT event_type, n_blocks, max_obs, CAST(sm AS DOUBLE) / CAST(n_blocks AS DOUBLE) AS mean, (CAST(smm AS DOUBLE) - CAST(sm AS DOUBLE) * CAST(sm AS DOUBLE) / CAST(n_blocks AS DOUBLE)) / (CAST(n_blocks AS DOUBLE) - 1.0) AS vr FROM cen), g AS (SELECT event_type, n_blocks, max_obs, mean, sqrt(vr) * ${math.sqrt(6.0) / math.Pi} AS beta FROM f WHERE vr > 0.0), g2 AS (SELECT *, mean - 0.5772156649 * beta AS mu FROM g) SELECT event_type, n_blocks, max_obs, round(mu, 6) AS mu, round(beta, 6) AS beta, round(mu - beta * ${math.log(-math.log(1.0 - 1.0 / 10.0))}, 6) AS rl10, round(mu - beta * ${math.log(-math.log(1.0 - 1.0 / 100.0))}, 6) AS rl100 FROM g2 ORDER BY event_type""",
-    // q321's lives chain at daily intervals with the actuarial c/2
-    // half-exposure convention
-    "q590_life_table" ->
-      """WITH e AS (SELECT user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), b AS (SELECT MIN(sec) AS lo, MAX(sec) AS hi FROM e), u AS (SELECT user_id, MIN(sec) AS first, MAX(sec) AS last FROM e GROUP BY 1), lv AS (SELECT CAST((last - first) // 3600 AS BIGINT) AS t, CASE WHEN last > (SELECT lo + 2 * (hi - lo) // 3 FROM b) THEN 0 ELSE 1 END AS death FROM u), ivl AS (SELECT t // 24 AS iv, death FROM lv), bt AS (SELECT iv, CAST(SUM(death) AS BIGINT) AS d, CAST(SUM(1 - death) AS BIGINT) AS c, COUNT(*) AS n_t FROM ivl GROUP BY 1), rk AS (SELECT iv, d, c, CAST(SUM(n_t) OVER (ORDER BY iv ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT) AS n_enter FROM bt), f AS (SELECT iv, d, c, n_enter, CAST(n_enter AS DOUBLE) - CAST(c AS DOUBLE) / 2.0 AS n_eff FROM rk), f2 AS (SELECT *, CASE WHEN n_eff > 0.0 THEN CAST(d AS DOUBLE) / n_eff ELSE 0.0 END AS q FROM f), f3 AS (SELECT *, 1.0 - q AS factor FROM f2), idx AS (SELECT iv, d, c, n_enter, n_eff, q, ROW_NUMBER() OVER (ORDER BY iv) AS i FROM f3), arr AS (SELECT list(factor ORDER BY iv) AS fs FROM f3) SELECT iv AS "interval", n_enter, d AS n_death, c AS n_censored, round(n_eff, 6) AS n_eff, round(q, 6) AS q_prob, round(list_reduce(list_prepend(CAST(1 AS DOUBLE), fs[1:CAST(i AS INTEGER)]), (a, x) -> a * x), 6) AS survival FROM idx, arr ORDER BY 1""",
-    // the geometric bisection replayed as a recursive CTE: sqrt
-    // midpoints are IEEE-exact, score terms pinned at 1e-9, so both
-    // engines walk identical brackets
-    "q591_cox_ph" ->
-      s"""WITH RECURSIVE e AS (SELECT user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec, event_type FROM events), u AS (SELECT user_id, MIN(sec) AS first, MAX(sec) AS last, MIN(CASE WHEN event_type = 'purchase' THEN sec END) AS conv FROM e GROUP BY 1), lv AS (SELECT CAST((COALESCE(conv, last) - first) // 3600 AS BIGINT) AS t, CASE WHEN conv IS NOT NULL THEN 1 ELSE 0 END AS death, (CAST(concat('0x', substr(md5(concat('cx:', CAST(user_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 = 0) AS isa FROM u), bt AS (SELECT t, CAST(SUM(CASE WHEN isa THEN death ELSE 0 END) AS BIGINT) AS d1, CAST(SUM(death) AS BIGINT) AS d, CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS nt1, COUNT(*) AS nt FROM lv GROUP BY 1), rk AS (SELECT t, d1, d, CAST(SUM(nt) OVER w - SUM(nt1) OVER w AS BIGINT) AS n0, CAST(SUM(nt1) OVER w AS BIGINT) AS n1 FROM bt WINDOW w AS (ORDER BY t ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)), cen AS (SELECT d1, d, n0, n1 FROM rk WHERE d > 0), us AS (SELECT CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS n_a, CAST(SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS BIGINT) AS n_b, CAST(SUM(CASE WHEN isa THEN death ELSE 0 END) AS BIGINT) AS d_a, CAST(SUM(death) AS BIGINT) AS d_total FROM lv), bis AS (SELECT 0 AS i, CAST(0.0001 AS DOUBLE) AS lo, CAST(10000.0 AS DOUBLE) AS hi UNION ALL SELECT i + 1, CASE WHEN ${coxScoreSql("sqrt(lo * hi)")} > 0 THEN sqrt(lo * hi) ELSE lo END, CASE WHEN ${coxScoreSql("sqrt(lo * hi)")} > 0 THEN hi ELSE sqrt(lo * hi) END FROM bis WHERE i < 60), fin AS (SELECT sqrt(lo * hi) AS th FROM bis WHERE i = 60), chk AS (SELECT (${coxScoreSql("CAST(0.0001 AS DOUBLE)")} > 0 AND ${coxScoreSql("CAST(10000.0 AS DOUBLE)")} <= 0 AND (SELECT COUNT(*) FROM cen) > 0) AS ok), inf AS (SELECT SUM(CAST(round(CAST(d AS DOUBLE) * CAST(n0 AS DOUBLE) * CAST(n1 AS DOUBLE) * th / ((CAST(n0 AS DOUBLE) + CAST(n1 AS DOUBLE) * th) * (CAST(n0 AS DOUBLE) + CAST(n1 AS DOUBLE) * th)), 9) AS DECIMAL(28,9))) AS ii FROM cen, fin) SELECT n_a, n_b, d_a, d_total, CASE WHEN ok AND CAST(ii AS DOUBLE) > 0.0 THEN round(th, 6) END AS hr, CASE WHEN ok AND CAST(ii AS DOUBLE) > 0.0 THEN round(ln(th), 6) END AS beta, CASE WHEN ok AND CAST(ii AS DOUBLE) > 0.0 THEN round(1.0 / sqrt(CAST(ii AS DOUBLE)), 6) END AS se, CASE WHEN ok AND CAST(ii AS DOUBLE) > 0.0 THEN round(ln(th) * sqrt(CAST(ii AS DOUBLE)), 6) END AS z FROM us, fin, chk, inf""",
-    // daily flag census, pooled center, per-subgroup binomial limits
-    "q592_p_chart" ->
-      """WITH r AS (SELECT CAST(epoch_ns(ts) // 1000000000 // 86400 AS BIGINT) AS b, CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS x FROM events), cen AS (SELECT b, COUNT(*) AS n, CAST(SUM(x) AS BIGINT) AS x FROM r GROUP BY 1), t AS (SELECT CAST(SUM(n) AS BIGINT) AS nn, CAST(SUM(x) AS BIGINT) AS xx FROM cen), f AS (SELECT cen.b, cen.n, cen.x, CAST(t.xx AS DOUBLE) / CAST(t.nn AS DOUBLE) AS pbar, sqrt((CAST(t.xx AS DOUBLE) / CAST(t.nn AS DOUBLE)) * (1.0 - CAST(t.xx AS DOUBLE) / CAST(t.nn AS DOUBLE)) / CAST(cen.n AS DOUBLE)) AS sig, CAST(cen.x AS DOUBLE) / CAST(cen.n AS DOUBLE) AS share FROM cen, t) SELECT b AS bucket, n, x, round(share, 6) AS share, round(pbar, 6) AS center, round(greatest(0.0, pbar - 3.0 * sig), 6) AS lcl, round(least(1.0, pbar + 3.0 * sig), 6) AS ucl, (share > pbar + 3.0 * sig OR share < pbar - 3.0 * sig) AS ooc FROM f ORDER BY bucket""",
-    // q408's cents census; the four ratios over exact group moments
-    "q593_anova_effects" ->
-      """WITH v AS (SELECT o_orderpriority AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c FROM orders), gg AS (SELECT g, COUNT(*) AS n, SUM(CAST(c AS HUGEINT)) AS s, SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS ss FROM v GROUP BY 1), a AS (SELECT CAST(COUNT(*) AS BIGINT) AS k, CAST(SUM(n) AS BIGINT) AS nn, SUM(s) AS st, SUM(ss) AS sst_raw, SUM(CAST(round(CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE), 6) AS DECIMAL(38,6))) AS sbn FROM gg), f AS (SELECT k, nn, CAST(sst_raw AS DOUBLE) - CAST(st AS DOUBLE) * CAST(st AS DOUBLE) / CAST(nn AS DOUBLE) AS sst, CAST(sbn AS DOUBLE) - CAST(st AS DOUBLE) * CAST(st AS DOUBLE) / CAST(nn AS DOUBLE) AS ssb, CAST(sst_raw AS DOUBLE) - CAST(sbn AS DOUBLE) AS ssw FROM a WHERE nn > k), f2 AS (SELECT k, nn, sst, ssb, ssw / (CAST(nn AS DOUBLE) - CAST(k AS DOUBLE)) AS msw FROM f) SELECT k, nn AS n, CASE WHEN sst > 0.0 THEN round(ssb / sst, 6) END AS eta2, CASE WHEN sst > 0.0 THEN round((ssb - (CAST(k AS DOUBLE) - 1.0) * msw) / (sst + msw), 6) END AS omega2, CASE WHEN sst > 0.0 THEN round((ssb - (CAST(k AS DOUBLE) - 1.0) * msw) / sst, 6) END AS epsilon2, CASE WHEN sst > 0.0 AND ssb / sst < 1.0 THEN round(sqrt((ssb / sst) / (1.0 - ssb / sst)), 6) END AS cohens_f FROM f2""",
-    // matched-item unit values, cross terms pinned at 1e-9
-    "q594_price_indices" ->
-      """WITH l AS (SELECT l_partkey AS item, CAST(year(l_shipdate) AS BIGINT) AS p, CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents, CAST(l_quantity AS BIGINT) AS q FROM lineitem WHERE year(l_shipdate) IN (1996, 1997)), cen AS (SELECT item, p, CAST(SUM(cents) AS BIGINT) AS v, CAST(SUM(q) AS BIGINT) AS q FROM l GROUP BY 1, 2), b AS (SELECT item, v AS v0, q AS q0 FROM cen WHERE p = 1996), c AS (SELECT item, v AS v1, q AS q1 FROM cen WHERE p = 1997), m AS (SELECT b.item, v0, q0, v1, q1 FROM b JOIN c USING (item) WHERE q0 > 0 AND q1 > 0), a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_matched, SUM(CAST(round((CAST(v1 AS DOUBLE) / CAST(q1 AS DOUBLE)) * CAST(q0 AS DOUBLE), 9) AS DECIMAL(28,9))) AS l_num, SUM(CAST(round((CAST(v0 AS DOUBLE) / CAST(q0 AS DOUBLE)) * CAST(q0 AS DOUBLE), 9) AS DECIMAL(28,9))) AS l_den, SUM(CAST(round((CAST(v1 AS DOUBLE) / CAST(q1 AS DOUBLE)) * CAST(q1 AS DOUBLE), 9) AS DECIMAL(28,9))) AS p_num, SUM(CAST(round((CAST(v0 AS DOUBLE) / CAST(q0 AS DOUBLE)) * CAST(q1 AS DOUBLE), 9) AS DECIMAL(28,9))) AS p_den FROM m), un AS (SELECT CAST(SUM(CASE WHEN v0 IS NULL OR v1 IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_unmatched FROM b FULL JOIN c USING (item)) SELECT n_matched, n_unmatched, CASE WHEN CAST(l_den AS DOUBLE) > 0.0 THEN round(CAST(l_num AS DOUBLE) / CAST(l_den AS DOUBLE), 6) END AS laspeyres, CASE WHEN CAST(p_den AS DOUBLE) > 0.0 THEN round(CAST(p_num AS DOUBLE) / CAST(p_den AS DOUBLE), 6) END AS paasche, CASE WHEN CAST(l_den AS DOUBLE) > 0.0 AND CAST(p_den AS DOUBLE) > 0.0 THEN round(sqrt((CAST(l_num AS DOUBLE) / CAST(l_den AS DOUBLE)) * (CAST(p_num AS DOUBLE) / CAST(p_den AS DOUBLE))), 6) END AS fisher FROM a, un""",
-    // q288's bins; the HL term pinned at 1e-9, saturated bins counted
-    // out, never absorbed
-    "q596_hosmer_lemeshow" ->
-      """WITH b0 AS (SELECT c_acctbal, CASE WHEN EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) THEN 1 ELSE 0 END AS pos FROM customer), mm AS (SELECT MIN(c_acctbal) AS blo, MAX(c_acctbal) AS bhi FROM b0), s AS (SELECT pos, CAST(round((c_acctbal - blo) / (bhi - blo), 6) AS DECIMAL(12,6)) AS score FROM b0, mm), r AS (SELECT pos, score, LEAST(CAST(floor(score * 10) AS BIGINT), 9) AS bin FROM s), bins AS (SELECT bin, COUNT(*) AS nk, CAST(SUM(pos) AS BIGINT) AS ok, SUM(score) AS psum FROM r GROUP BY 1), t AS (SELECT bin, nk, ok, CAST(psum AS DOUBLE) / CAST(nk AS DOUBLE) AS pb FROM bins), f AS (SELECT CAST(SUM(nk) AS BIGINT) AS n, CAST(SUM(CASE WHEN pb > 0.0 AND pb < 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_bins, CAST(SUM(CASE WHEN pb > 0.0 AND pb < 1.0 THEN 0 ELSE 1 END) AS BIGINT) AS n_dropped, SUM(CASE WHEN pb > 0.0 AND pb < 1.0 THEN CAST(round((CAST(ok AS DOUBLE) - CAST(nk AS DOUBLE) * pb) * (CAST(ok AS DOUBLE) - CAST(nk AS DOUBLE) * pb) / (CAST(nk AS DOUBLE) * pb * (1.0 - pb)), 9) AS DECIMAL(28,9)) END) AS hl FROM t) SELECT n, n_bins, n_dropped, CASE WHEN n_bins > 2 THEN n_bins - 2 END AS df, CASE WHEN n_bins > 2 THEN round(CAST(hl AS DOUBLE), 6) END AS hl_chi2 FROM f""",
-    // the pinned pmf ladder replayed as a recursive CTE; zeros filled
-    // from the grid complement, decimal tail mass
-    "q597_poisson_gof" ->
-      """WITH RECURSIVE dd AS (SELECT user_id AS u, CAST(epoch_ns(ts) // 1000000000 // 86400 AS BIGINT) AS d FROM events), pc AS (SELECT u, d, COUNT(*) AS k FROM dd GROUP BY 1, 2), gs AS (SELECT (SELECT COUNT(DISTINCT u) FROM dd) * (SELECT COUNT(DISTINCT d) FROM dd) AS grid, (SELECT COUNT(*) FROM pc) AS nonzero, (SELECT CAST(SUM(k) AS BIGINT) FROM pc) AS events_n), lam AS (SELECT CAST(events_n AS DOUBLE) / CAST(grid AS DOUBLE) AS lambda FROM gs), pmf(k, p) AS (SELECT 0, round(exp(-(SELECT lambda FROM lam)), 12) UNION ALL SELECT k + 1, round(p * (SELECT lambda FROM lam) / (k + 1), 12) FROM pmf WHERE k < 30), mass AS (SELECT SUM(CAST(p AS DECIMAL(18,12))) AS m FROM pmf), expd AS (SELECT CAST(k AS BIGINT) AS cell, round((SELECT CAST(grid AS DOUBLE) FROM gs) * p, 12) AS e FROM pmf UNION ALL SELECT 31, round((SELECT CAST(grid AS DOUBLE) FROM gs) * greatest(0.0, CAST(1 - (SELECT m FROM mass) AS DOUBLE)), 12)), obs0 AS (SELECT LEAST(k, 31) AS cell, CAST(COUNT(*) AS BIGINT) AS obs FROM pc GROUP BY 1 UNION ALL SELECT 0, (SELECT grid - nonzero FROM gs)), obs AS (SELECT cell, CAST(SUM(obs) AS BIGINT) AS obs FROM obs0 GROUP BY 1), j AS (SELECT e.cell, e.e, COALESCE(o.obs, 0) AS obs FROM expd e LEFT JOIN obs o USING (cell) WHERE e.e > 0.0), f AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_cells, SUM(CAST(round((CAST(obs AS DOUBLE) - e) * (CAST(obs AS DOUBLE) - e) / e, 9) AS DECIMAL(28,9))) AS chi2s FROM j) SELECT (SELECT CAST(grid AS BIGINT) FROM gs) AS n_grid, (SELECT events_n FROM gs) AS n_events, round((SELECT lambda FROM lam), 6) AS lambda, n_cells, n_cells - 2 AS df, round(CAST(chi2s AS DOUBLE), 6) AS chi2 FROM f""",
-    // O·ln(O·n/(r·c)) over exact integers — E never materializes
-    "q598_g_test" ->
-      """WITH cen AS (SELECT o_orderstatus AS x, o_orderpriority AS y, COUNT(*) AS o FROM orders GROUP BY 1, 2), t AS (SELECT x, y, o, SUM(o) OVER (PARTITION BY x) AS rt, SUM(o) OVER (PARTITION BY y) AS ct, SUM(o) OVER () AS n FROM cen), d AS (SELECT CAST(COUNT(DISTINCT x) AS BIGINT) AS nx, CAST(COUNT(DISTINCT y) AS BIGINT) AS ny FROM cen), f AS (SELECT CAST(MAX(n) AS BIGINT) AS n, SUM(CAST(round(CAST(o AS DOUBLE) * ln(CAST(o AS DOUBLE) * CAST(n AS DOUBLE) / (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE))), 9) AS DECIMAL(28,9))) AS gs FROM t) SELECT n, (nx - 1) * (ny - 1) AS df, round(2.0 * CAST(gs AS DOUBLE), 6) AS g_stat, round(CAST(gs AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mi_nats FROM f, d""",
-    // full spine; the Haberman denominator e(1−r/n)(1−c/n)
-    "q599_adjusted_residuals" ->
-      """WITH cen AS (SELECT o_orderstatus AS x, o_orderpriority AS y, COUNT(*) AS o FROM orders GROUP BY 1, 2), sp AS (SELECT a.x, b.y FROM (SELECT DISTINCT x FROM cen) a CROSS JOIN (SELECT DISTINCT y FROM cen) b), g AS (SELECT sp.x, sp.y, COALESCE(cen.o, 0) AS o FROM sp LEFT JOIN cen ON cen.x = sp.x AND cen.y = sp.y), t AS (SELECT x, y, o, SUM(o) OVER (PARTITION BY x) AS rt, SUM(o) OVER (PARTITION BY y) AS ct, SUM(o) OVER () AS n FROM g), f AS (SELECT x, y, CAST(o AS BIGINT) AS o, CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE) AS e, (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE)) * (1.0 - CAST(rt AS DOUBLE) / CAST(n AS DOUBLE)) * (1.0 - CAST(ct AS DOUBLE) / CAST(n AS DOUBLE)) AS dn FROM t) SELECT x, y, o, round(e, 6) AS expected, CASE WHEN e > 0.0 THEN round((CAST(o AS DOUBLE) - e) / sqrt(e), 6) END AS std_resid, CASE WHEN dn > 0.0 THEN round((CAST(o AS DOUBLE) - e) / sqrt(dn), 6) END AS adj_resid, CASE WHEN dn > 0.0 THEN (abs((CAST(o AS DOUBLE) - e) / sqrt(dn)) > 2.0) END AS notable FROM f ORDER BY x, y""",
-    // two one-sided z's against the margin, the shared critical literal
-    "q600_tost_equivalence" ->
-      """WITH a AS (SELECT CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS cv, CAST(concat('0x', substr(md5(concat('eq:', CAST(event_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 AS arm FROM events), g AS (SELECT CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a, CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b, CAST(SUM(CASE WHEN arm = 0 THEN cv ELSE 0 END) AS BIGINT) AS conv_a, CAST(SUM(CASE WHEN arm = 1 THEN cv ELSE 0 END) AS BIGINT) AS conv_b FROM a), f AS (SELECT *, CAST(conv_a AS DOUBLE) / CAST(n_a AS DOUBLE) AS pa, CAST(conv_b AS DOUBLE) / CAST(n_b AS DOUBLE) AS pb FROM g), f2 AS (SELECT *, sqrt(pa * (1.0 - pa) / CAST(n_a AS DOUBLE) + pb * (1.0 - pb) / CAST(n_b AS DOUBLE)) AS se, pa - pb AS diff FROM f) SELECT n_a, n_b, conv_a, conv_b, round(diff, 6) AS risk_diff, CAST(0.005 AS DOUBLE) AS margin, CASE WHEN n_a > 0 AND n_b > 0 AND se > 0.0 THEN round((diff + 0.005) / se, 6) END AS z_lower, CASE WHEN n_a > 0 AND n_b > 0 AND se > 0.0 THEN round((0.005 - diff) / se, 6) END AS z_upper, CASE WHEN n_a > 0 AND n_b > 0 AND se > 0.0 THEN ((diff + 0.005) / se > 1.6448536269514722 AND (0.005 - diff) / se > 1.6448536269514722) END AS equivalent FROM f2""",
-    // pure-integer DP replayed as a recursive CTE marching the
-    // anti-diagonal wavefront with the previous two diagonals as lists
-    "q601_dtw_profiles" ->
-      """WITH RECURSIVE cen AS (SELECT event_type AS k, (epoch_ns(ts) // 1000000000 // 3600) % 24 AS s, COUNT(*) AS c FROM events GROUP BY 1, 2), tot AS (SELECT k, SUM(c) AS t FROM cen GROUP BY 1), sp AS (SELECT k, CAST(unnest(range(0, 24)) AS BIGINT) AS s FROM tot), prof AS (SELECT sp.k, sp.s, CAST(COALESCE((cen.c * 1000000) // tot.t, 0) AS BIGINT) AS ppm FROM sp JOIN tot ON tot.k = sp.k LEFT JOIN cen ON cen.k = sp.k AND cen.s = sp.s), arrs AS (SELECT k, list(ppm ORDER BY s) AS v FROM prof GROUP BY 1), prs AS (SELECT a.k AS ka, b.k AS kb, a.v AS va, b.v AS vb FROM arrs a JOIN arrs b ON a.k < b.k), dp(ka, kb, va, vb, d, prev, cur) AS (SELECT ka, kb, va, vb, 0, CAST([] AS BIGINT[]), [abs(va[1] - vb[1])] FROM prs UNION ALL SELECT ka, kb, va, vb, d + 1, cur, list_transform(range(greatest(0, d - 22), least(23, d + 1) + 1), i -> abs(va[CAST(i + 1 AS INTEGER)] - vb[CAST(d + 2 - i AS INTEGER)]) + least(CASE WHEN i >= 1 AND i - 1 >= greatest(0, d - 23) THEN cur[CAST(i - greatest(0, d - 23) AS INTEGER)] ELSE 9223372036854775807 END, CASE WHEN i <= d THEN cur[CAST(i - greatest(0, d - 23) + 1 AS INTEGER)] ELSE 9223372036854775807 END, CASE WHEN i >= 1 AND i <= d AND i - 1 >= greatest(0, d - 24) THEN prev[CAST(i - greatest(0, d - 24) AS INTEGER)] ELSE 9223372036854775807 END)) FROM dp WHERE d < 46), fin AS (SELECT ka, kb, cur[1] AS dtw FROM dp WHERE d = 46) SELECT ka AS key_a, kb AS key_b, CAST(dtw AS BIGINT) AS dtw_ppm, round(CAST(dtw AS DOUBLE) / 1e6, 6) AS dtw_share FROM fin ORDER BY key_a, key_b""",
-    // per-slot cos/sin pinned at 1e-12 before the exact decimal sums
-    "q602_circular_stats" ->
-      """WITH cen AS (SELECT event_type AS k, (epoch_ns(ts) // 1000000000 // 3600) % 24 AS s, COUNT(*) AS c FROM events GROUP BY 1, 2), st AS (SELECT k, c, CAST(round(cos(s * (2 * pi() / 24)), 12) AS DECIMAL(15,12)) AS cs, CAST(round(sin(s * (2 * pi() / 24)), 12) AS DECIMAL(15,12)) AS sn FROM cen), a AS (SELECT k, CAST(SUM(c) AS BIGINT) AS n, SUM(CAST(c AS DECIMAL(26,12)) * cs) AS sc, SUM(CAST(c AS DECIMAL(26,12)) * sn) AS ss FROM st GROUP BY 1), f AS (SELECT k, n, sqrt(CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE) + CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE)) / CAST(n AS DOUBLE) AS r, atan2(CAST(ss AS DOUBLE), CAST(sc AS DOUBLE)) AS dir FROM a) SELECT k AS key, n, round(((dir + 2 * pi()) % (2 * pi())) * (24 / (2 * pi())), 6) AS mean_hour, round(r, 6) AS resultant_r, round(1.0 - r, 6) AS circ_variance, round(CAST(n AS DOUBLE) * r * r, 6) AS rayleigh_z FROM f ORDER BY key""",
-    // five unrolled pair-halving levels, exact integer energies
-    "q604_haar_energy" ->
-      """WITH h AS (SELECT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id, COUNT(*) AS n FROM events GROUP BY 1, 2), b0 AS (SELECT event_type AS k, CAST(n AS BIGINT) AS v, CAST(ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hour_id) - 1 AS BIGINT) AS i, COUNT(*) OVER (PARTITION BY event_type) AS nn FROM h), base AS (SELECT k, i, v FROM b0 WHERE i < (nn // 32) * 32), l1 AS (SELECT k, i // 2 AS i2, MAX(CASE WHEN i % 2 = 0 THEN v END) AS a, MAX(CASE WHEN i % 2 = 1 THEN v END) AS b FROM base GROUP BY 1, 2), e1 AS (SELECT k, CAST(1 AS BIGINT) AS level, CAST(COUNT(*) AS BIGINT) AS n_coeffs, CAST(SUM((a - b) * (a - b)) AS BIGINT) AS energy FROM l1 GROUP BY 1), c1 AS (SELECT k, i2 AS i, a + b AS v FROM l1), l2 AS (SELECT k, i // 2 AS i2, MAX(CASE WHEN i % 2 = 0 THEN v END) AS a, MAX(CASE WHEN i % 2 = 1 THEN v END) AS b FROM c1 GROUP BY 1, 2), e2 AS (SELECT k, CAST(2 AS BIGINT), CAST(COUNT(*) AS BIGINT), CAST(SUM((a - b) * (a - b)) AS BIGINT) FROM l2 GROUP BY 1), c2 AS (SELECT k, i2 AS i, a + b AS v FROM l2), l3 AS (SELECT k, i // 2 AS i2, MAX(CASE WHEN i % 2 = 0 THEN v END) AS a, MAX(CASE WHEN i % 2 = 1 THEN v END) AS b FROM c2 GROUP BY 1, 2), e3 AS (SELECT k, CAST(3 AS BIGINT), CAST(COUNT(*) AS BIGINT), CAST(SUM((a - b) * (a - b)) AS BIGINT) FROM l3 GROUP BY 1), c3 AS (SELECT k, i2 AS i, a + b AS v FROM l3), l4 AS (SELECT k, i // 2 AS i2, MAX(CASE WHEN i % 2 = 0 THEN v END) AS a, MAX(CASE WHEN i % 2 = 1 THEN v END) AS b FROM c3 GROUP BY 1, 2), e4 AS (SELECT k, CAST(4 AS BIGINT), CAST(COUNT(*) AS BIGINT), CAST(SUM((a - b) * (a - b)) AS BIGINT) FROM l4 GROUP BY 1), c4 AS (SELECT k, i2 AS i, a + b AS v FROM l4), l5 AS (SELECT k, i // 2 AS i2, MAX(CASE WHEN i % 2 = 0 THEN v END) AS a, MAX(CASE WHEN i % 2 = 1 THEN v END) AS b FROM c4 GROUP BY 1, 2), e5 AS (SELECT k, CAST(5 AS BIGINT), CAST(COUNT(*) AS BIGINT), CAST(SUM((a - b) * (a - b)) AS BIGINT) FROM l5 GROUP BY 1), c5 AS (SELECT k, i2 AS i, a + b AS v FROM l5), ea AS (SELECT k, CAST(0 AS BIGINT), CAST(COUNT(*) AS BIGINT), CAST(SUM(v * v) AS BIGINT) FROM c5 GROUP BY 1), allx AS (SELECT * FROM e1 UNION ALL SELECT * FROM e2 UNION ALL SELECT * FROM e3 UNION ALL SELECT * FROM e4 UNION ALL SELECT * FROM e5 UNION ALL SELECT * FROM ea), tot AS (SELECT k, CAST(SUM(energy) AS BIGINT) AS te FROM allx GROUP BY 1) SELECT allx.k AS event_type, level, n_coeffs, energy, CASE WHEN te > 0 THEN round(CAST(energy AS DOUBLE) / CAST(te AS DOUBLE), 6) END AS energy_share FROM allx JOIN tot ON allx.k = tot.k ORDER BY event_type, level""",
-    // value census → ceiling-rank thresholds → one conditional excess
-    // pass with the spine broadcast
-    "q605_mean_excess" ->
-      """WITH h AS (SELECT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id, COUNT(*) AS n FROM events GROUP BY 1, 2), base AS (SELECT event_type AS k, CAST(n AS BIGINT) AS v FROM h), cen AS (SELECT k, v, COUNT(*) AS c FROM base GROUP BY 1, 2), rk AS (SELECT k, v, CAST(SUM(c) OVER (PARTITION BY k ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum, CAST(SUM(c) OVER (PARTITION BY k) AS BIGINT) AS n FROM cen), sp AS (SELECT CAST(unnest([50, 75, 90, 95]) AS BIGINT) AS pct), th AS (SELECT k, pct, MIN(v) AS u, MAX(n) AS n FROM rk, sp WHERE cum * 100 >= pct * n GROUP BY 1, 2), ex AS (SELECT b.k, t.pct, COUNT(*) AS n_exceed, CAST(SUM(b.v - t.u) AS BIGINT) AS excess_sum FROM base b JOIN th t ON b.k = t.k AND b.v > t.u GROUP BY 1, 2) SELECT th.k AS event_type, th.pct, th.u AS threshold, th.n, CAST(COALESCE(ex.n_exceed, 0) AS BIGINT) AS n_exceed, round(CAST(COALESCE(ex.n_exceed, 0) AS DOUBLE) / CAST(th.n AS DOUBLE), 6) AS exceed_share, CASE WHEN ex.n_exceed > 0 THEN round(CAST(ex.excess_sum AS DOUBLE) / CAST(ex.n_exceed AS DOUBLE), 6) END AS mean_excess FROM th LEFT JOIN ex ON th.k = ex.k AND th.pct = ex.pct ORDER BY event_type, th.pct""",
-    // first-half calibration, second-half violations, four pinned lns
-    "q606_kupiec_pof" ->
-      """WITH h AS (SELECT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id, COUNT(*) AS n FROM events GROUP BY 1, 2), b0 AS (SELECT event_type AS k, CAST(n AS BIGINT) AS v, CAST(ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hour_id) AS BIGINT) AS r, COUNT(*) OVER (PARTITION BY event_type) AS nn FROM h), base AS (SELECT k, v, (r * 2 <= nn) AS half FROM b0), calc AS (SELECT k, v, COUNT(*) AS c FROM base WHERE half GROUP BY 1, 2), rk AS (SELECT k, v, CAST(SUM(c) OVER (PARTITION BY k ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum, CAST(SUM(c) OVER (PARTITION BY k) AS BIGINT) AS nc FROM calc), cal AS (SELECT k, MIN(v) AS u FROM rk WHERE cum * 100 >= 95 * nc GROUP BY 1), t AS (SELECT b.k, cal.u, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(CASE WHEN b.v > cal.u THEN 1 ELSE 0 END) AS BIGINT) AS x FROM base b JOIN cal ON b.k = cal.k WHERE NOT b.half GROUP BY 1, 2), f AS (SELECT k, u, n, x, CAST(x AS DOUBLE) / CAST(n AS DOUBLE) AS xhat FROM t), g AS (SELECT *, round((CAST(n AS DOUBLE) - CAST(x AS DOUBLE)) * ln(0.95) + CAST(x AS DOUBLE) * ln(0.05), 9) AS lc, round(CASE WHEN x = 0 THEN CAST(n AS DOUBLE) * ln(1.0 - xhat) WHEN x = n THEN CAST(n AS DOUBLE) * ln(xhat) ELSE (CAST(n AS DOUBLE) - CAST(x AS DOUBLE)) * ln(1.0 - xhat) + CAST(x AS DOUBLE) * ln(xhat) END, 9) AS lo FROM f) SELECT k AS event_type, u AS threshold, n, x, CAST(0.05 AS DOUBLE) AS claimed_rate, round(xhat, 6) AS observed_rate, round(-2.0 * (lc - lo), 6) AS kupiec_lr FROM g ORDER BY event_type""",
-    // q476's power sums, the one chi-square readout
-    "q607_jarque_bera" ->
-      """WITH v AS (SELECT o_orderpriority AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS HUGEINT) AS c FROM orders), a AS (SELECT g, COUNT(*) AS n, SUM(c) AS s1, SUM(c * c) AS s2, SUM(c * c * c) AS s3, SUM(c * c * c * c) AS s4 FROM v GROUP BY 1 HAVING COUNT(*) >= 4), f AS (SELECT g, CAST(n AS BIGINT) AS n, CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS mean, CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE) AS r2, CAST(s3 AS DOUBLE) / CAST(n AS DOUBLE) AS r3, CAST(s4 AS DOUBLE) / CAST(n AS DOUBLE) AS r4 FROM a), m AS (SELECT g, n, r2 - mean * mean AS m2, r3 - 3.0 * mean * r2 + 2.0 * mean * mean * mean AS m3, r4 - 4.0 * mean * r3 + 6.0 * mean * mean * r2 - 3.0 * mean * mean * mean * mean AS m4 FROM f), j AS (SELECT g, n, m2, m3 / (m2 * sqrt(m2)) AS g1, m4 / (m2 * m2) - 3.0 AS g2 FROM m) SELECT g, n, CASE WHEN m2 > 0.0 THEN round(g1, 6) END AS skew_g1, CASE WHEN m2 > 0.0 THEN round(g2, 6) END AS kurt_g2, CASE WHEN m2 > 0.0 THEN round(CAST(n AS DOUBLE) / 6.0 * (g1 * g1 + g2 * g2 / 4.0), 6) END AS jarque_bera FROM j ORDER BY g""",
-    // q288's bins, two arm shares pinned at 1e-9, the min-mass sum
-    "q608_overlap_coefficient" ->
-      """WITH b0 AS (SELECT c_acctbal, (c_mktsegment = 'BUILDING') AS pos FROM customer), mm AS (SELECT MIN(c_acctbal) AS blo, MAX(c_acctbal) AS bhi FROM b0), s AS (SELECT pos, CAST(round((c_acctbal - blo) / (bhi - blo), 6) AS DECIMAL(12,6)) AS score FROM b0, mm), r AS (SELECT pos, LEAST(CAST(floor(score * 10) AS BIGINT), 9) AS bin FROM s), bins AS (SELECT bin, CAST(SUM(CASE WHEN pos THEN 1 ELSE 0 END) AS BIGINT) AS ca, CAST(SUM(CASE WHEN pos THEN 0 ELSE 1 END) AS BIGINT) AS cb FROM r GROUP BY 1), t AS (SELECT CAST(SUM(ca) AS BIGINT) AS na, CAST(SUM(cb) AS BIGINT) AS nb FROM bins), w AS (SELECT bin, na, nb, CASE WHEN na > 0 THEN CAST(round(CAST(ca AS DOUBLE) / CAST(na AS DOUBLE), 9) AS DECIMAL(18,9)) ELSE CAST(0 AS DECIMAL(18,9)) END AS sa, CASE WHEN nb > 0 THEN CAST(round(CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE), 9) AS DECIMAL(18,9)) ELSE CAST(0 AS DECIMAL(18,9)) END AS sb FROM bins, t) SELECT na AS n_a, nb AS n_b, CAST(COUNT(*) AS BIGINT) AS n_bins, CASE WHEN na > 0 AND nb > 0 THEN round(CAST(SUM(LEAST(sa, sb)) AS DOUBLE), 6) END AS overlap FROM w GROUP BY na, nb""",
-    // strict running-max flags + the pinned harmonic budget
-    "q609_record_stats" ->
-      """WITH h AS (SELECT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id, COUNT(*) AS n FROM events GROUP BY 1, 2), b0 AS (SELECT event_type AS k, hour_id AS b, CAST(n AS BIGINT) AS v FROM h), fl AS (SELECT k, b, v, MAX(v) OVER (PARTITION BY k ORDER BY b ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM b0), fr AS (SELECT k, b, CASE WHEN pm IS NULL OR v > pm THEN 1 ELSE 0 END AS rec FROM fl), a AS (SELECT k, COUNT(*) AS n, CAST(SUM(rec) AS BIGINT) AS n_records, MAX(CASE WHEN rec = 1 THEN b END) AS last_record_bucket FROM fr GROUP BY 1), hh AS (SELECT k, n, n_records, last_record_bucket, (SELECT SUM(CAST(round(1.0 / CAST(i AS DOUBLE), 12) AS DECIMAL(28,12))) FROM unnest(range(1, n + 1)) AS u(i)) AS hn FROM a) SELECT k AS event_type, CAST(n AS BIGINT) AS n, n_records, last_record_bucket, round(CAST(hn AS DOUBLE), 6) AS expected_records, round(CAST(n_records AS DOUBLE) / CAST(hn AS DOUBLE), 6) AS record_ratio FROM hh ORDER BY event_type""",
-    // one lag self-join, exact pair moments, the UM/US/UC closure
-    "q611_theil_u" ->
-      """WITH h AS (SELECT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id, COUNT(*) AS n FROM events GROUP BY 1, 2), b0 AS (SELECT event_type AS k, hour_id AS b, CAST(n AS BIGINT) AS v FROM h), pr AS (SELECT k, v, LAG(v, 24) OVER (PARTITION BY k ORDER BY b) AS f FROM b0), pp AS (SELECT k, v, f FROM pr WHERE f IS NOT NULL), cen AS (SELECT k, COUNT(*) AS n, CAST(SUM(v) AS BIGINT) AS sa, CAST(SUM(f) AS BIGINT) AS sf, CAST(SUM(v * v) AS BIGINT) AS saa, CAST(SUM(f * f) AS BIGINT) AS sff, CAST(SUM((v - f) * (v - f)) AS BIGINT) AS sse FROM pp GROUP BY 1 HAVING COUNT(*) >= 3), g AS (SELECT k, CAST(n AS BIGINT) AS n, CAST(sa AS DOUBLE) / CAST(n AS DOUBLE) AS abar, CAST(sf AS DOUBLE) / CAST(n AS DOUBLE) AS fbar, CAST(saa AS DOUBLE) / CAST(n AS DOUBLE) AS raa, CAST(sff AS DOUBLE) / CAST(n AS DOUBLE) AS rff, CAST(sse AS DOUBLE) / CAST(n AS DOUBLE) AS mse FROM cen), g2 AS (SELECT *, raa - abar * abar AS va, rff - fbar * fbar AS vf FROM g), g3 AS (SELECT *, (fbar - abar) * (fbar - abar) / mse AS um, (sqrt(vf) - sqrt(va)) * (sqrt(vf) - sqrt(va)) / mse AS us FROM g2) SELECT k AS event_type, n, round(sqrt(mse), 6) AS rmse, CASE WHEN raa + rff > 0.0 THEN round(sqrt(mse) / (sqrt(raa) + sqrt(rff)), 6) END AS theil_u1, CASE WHEN mse > 0.0 THEN round(um, 6) END AS um_bias, CASE WHEN mse > 0.0 AND va >= 0.0 AND vf >= 0.0 THEN round(us, 6) END AS us_variance, CASE WHEN mse > 0.0 AND va >= 0.0 AND vf >= 0.0 THEN round(1.0 - um - us, 6) END AS uc_covariance FROM g3 ORDER BY event_type""",
-    // full slot spine — an empty slot still owes its n/k expectation
-    "q613_uniformity_chi2" ->
-      """WITH cen AS (SELECT event_type AS k, (epoch_ns(ts) // 1000000000 // 3600) % 24 AS s, COUNT(*) AS c FROM events GROUP BY 1, 2), sp AS (SELECT k, CAST(unnest(range(0, 24)) AS BIGINT) AS s FROM (SELECT DISTINCT k FROM cen)), fu AS (SELECT sp.k, sp.s, COALESCE(cen.c, 0) AS c FROM sp LEFT JOIN cen ON cen.k = sp.k AND cen.s = sp.s), tot AS (SELECT k, CAST(SUM(c) AS BIGINT) AS n FROM fu GROUP BY 1), f AS (SELECT fu.k, fu.c, tot.n, CAST(tot.n AS DOUBLE) / 24 AS e FROM fu JOIN tot ON fu.k = tot.k WHERE tot.n > 0) SELECT k AS key, n, CAST(23 AS BIGINT) AS df, round(CAST(SUM(CAST(round((CAST(c AS DOUBLE) - e) * (CAST(c AS DOUBLE) - e) / e, 9) AS DECIMAL(28,9))) AS DOUBLE), 6) AS chi2 FROM f GROUP BY k, n ORDER BY key""",
-    // one (segment, period) census; the three effect columns sum to
-    // the KPI move by construction
-    "q614_kpi_bridge" ->
-      """WITH e0 AS (SELECT CAST(epoch_ns(ts) // 1000000000 // 86400 AS BIGINT) AS day, event_type AS seg, CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS e FROM events), b AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM e0), r AS (SELECT seg, (day <= (SELECT lo + (hi - lo) // 2 FROM b)) AS isbase, e FROM e0), cen AS (SELECT seg, CAST(SUM(CASE WHEN isbase THEN 1 ELSE 0 END) AS BIGINT) AS n0, CAST(SUM(CASE WHEN isbase THEN 0 ELSE 1 END) AS BIGINT) AS n1, CAST(SUM(CASE WHEN isbase THEN e ELSE 0 END) AS BIGINT) AS e0, CAST(SUM(CASE WHEN isbase THEN 0 ELSE e END) AS BIGINT) AS e1 FROM r GROUP BY 1), tot AS (SELECT CAST(SUM(n0) AS BIGINT) AS t0, CAST(SUM(n1) AS BIGINT) AS t1 FROM cen), f AS (SELECT seg, n0, n1, CASE WHEN n0 > 0 THEN CAST(n0 AS DOUBLE) / CAST(t0 AS DOUBLE) ELSE 0.0 END AS w0, CASE WHEN n1 > 0 THEN CAST(n1 AS DOUBLE) / CAST(t1 AS DOUBLE) ELSE 0.0 END AS w1, CASE WHEN n0 > 0 THEN CAST(e0 AS DOUBLE) / CAST(n0 AS DOUBLE) ELSE 0.0 END AS r0, CASE WHEN n1 > 0 THEN CAST(e1 AS DOUBLE) / CAST(n1 AS DOUBLE) ELSE 0.0 END AS r1 FROM cen, tot) SELECT seg, n0, n1, round(r0, 6) AS rate_base, round(r1, 6) AS rate_cur, round(w0, 6) AS mix_base, round(w1, 6) AS mix_cur, round(w0 * (r1 - r0), 6) + 0.0 AS rate_effect, round((w1 - w0) * r0, 6) + 0.0 AS mix_effect, round((w1 - w0) * (r1 - r0), 6) + 0.0 AS interaction FROM f ORDER BY seg""",
-    // four unrolled R/S window sizes, pinned ratios, the 4-point fit
-    "q615_hurst" ->
-      s"""WITH h AS (SELECT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id, COUNT(*) AS n FROM events GROUP BY 1, 2), hbase AS (SELECT event_type AS k, CAST(n AS BIGINT) AS v, CAST(ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hour_id) - 1 AS BIGINT) AS i FROM h), pts AS (${hurstPtsSql(8)} UNION ALL ${hurstPtsSql(16)} UNION ALL ${hurstPtsSql(32)} UNION ALL ${hurstPtsSql(64)}), fit AS (SELECT k, COUNT(*) AS np, SUM(x) AS sx, SUM(y) AS sy, SUM(x * x) AS sxx, SUM(x * y) AS sxy FROM pts GROUP BY 1 HAVING COUNT(*) >= 3) SELECT k AS event_type, CAST(np AS BIGINT) AS n_sizes, round((CAST(np AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (CAST(np AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6) AS hurst FROM fit ORDER BY event_type""",
-    // one per-user lag pass, transition census, pinned ln terms
-    "q616_entropy_rate" ->
-      """WITH t0 AS (SELECT user_id, event_type AS st, LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev FROM events), tr AS (SELECT prev, st, COUNT(*) AS n FROM t0 WHERE prev IS NOT NULL GROUP BY 1, 2), rt AS (SELECT prev, CAST(SUM(n) AS BIGINT) AS nr FROM tr GROUP BY 1), tt AS (SELECT (SELECT CAST(SUM(n) AS BIGINT) FROM tr) AS nn, (SELECT CAST(COUNT(*) AS BIGINT) FROM (SELECT prev AS s0 FROM tr UNION SELECT st FROM tr)) AS k), f AS (SELECT SUM(CAST(round(CAST(tr.n AS DOUBLE) * ln(CAST(tr.n AS DOUBLE) / CAST(rt.nr AS DOUBLE)), 9) AS DECIMAL(28,9))) AS tsum FROM tr JOIN rt ON tr.prev = rt.prev) SELECT nn AS n_transitions, k AS n_states, round(-CAST(tsum AS DOUBLE) / CAST(nn AS DOUBLE), 6) AS entropy_rate, CASE WHEN k > 1 THEN round(-CAST(tsum AS DOUBLE) / CAST(nn AS DOUBLE) / ln(CAST(k AS DOUBLE)), 6) END AS entropy_norm FROM f, tt""",
-    // bucket census → cumulative class sweep → argmax gain with the
-    // deterministic low-boundary tie break
-    "q617_stump_split" ->
-      """WITH v AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 10000 AS b, CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y FROM orders), cen AS (SELECT b, COUNT(*) AS n, CAST(SUM(y) AS BIGINT) AS pos FROM v GROUP BY 1), sw AS (SELECT b, CAST(SUM(n) OVER (ORDER BY b ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cn, CAST(SUM(pos) OVER (ORDER BY b ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cp, CAST(SUM(n) OVER () AS BIGINT) AS tn, CAST(SUM(pos) OVER () AS BIGINT) AS tp FROM cen), f AS (SELECT b, cn AS n_left, tn - cn AS n_right, 1.0 - (CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE)) * (CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE)) - (1.0 - CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE)) * (1.0 - CAST(tp AS DOUBLE) / CAST(tn AS DOUBLE)) AS parent, (CAST(cn AS DOUBLE) * (1.0 - (CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE)) * (CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE)) - (1.0 - CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE)) * (1.0 - CAST(cp AS DOUBLE) / CAST(cn AS DOUBLE))) + CAST(tn - cn AS DOUBLE) * (1.0 - (CAST(tp - cp AS DOUBLE) / CAST(tn - cn AS DOUBLE)) * (CAST(tp - cp AS DOUBLE) / CAST(tn - cn AS DOUBLE)) - (1.0 - CAST(tp - cp AS DOUBLE) / CAST(tn - cn AS DOUBLE)) * (1.0 - CAST(tp - cp AS DOUBLE) / CAST(tn - cn AS DOUBLE)))) / CAST(tn AS DOUBLE) AS weighted FROM sw WHERE cn > 0 AND cn < tn), s AS (SELECT b, n_left, n_right, round(parent, 9) AS pg, round(weighted, 9) AS wg, round(parent - weighted, 9) AS gn FROM f) SELECT b AS split_bucket, n_left, n_right, round(pg, 6) AS parent_gini, round(wg, 6) AS weighted_gini, round(gn, 6) AS gain FROM s ORDER BY gn DESC, b LIMIT 1""",
-    // doubled tie-averaged ranks, the exact-integer S₄ and tie masses
-    "q618_kendall_w" ->
-      """WITH cen AS (SELECT CAST(epoch_ns(ts) // 1000000000 // 86400 AS BIGINT) AS r, event_type AS it, COUNT(*) AS s FROM events GROUP BY 1, 2), sp AS (SELECT a.r, b.it FROM (SELECT DISTINCT r FROM cen) a CROSS JOIN (SELECT DISTINCT it FROM cen) b), fu AS (SELECT sp.r, sp.it, COALESCE(cen.s, 0) AS s FROM sp LEFT JOIN cen ON cen.r = sp.r AND cen.it = sp.it), rk AS (SELECT r, it, s, CAST(RANK() OVER (PARTITION BY r ORDER BY s) AS BIGINT) AS minrank, CAST(COUNT(*) OVER (PARTITION BY r, s) AS BIGINT) AS t FROM fu), r2t AS (SELECT r, it, 2 * minrank + t - 1 AS r2 FROM rk), dims AS (SELECT CAST(COUNT(DISTINCT r) AS BIGINT) AS m, CAST(COUNT(DISTINCT it) AS BIGINT) AS n FROM fu), tie AS (SELECT CAST(COALESCE(SUM(t * t * t - t), 0) AS BIGINT) AS tsum FROM (SELECT DISTINCT r, s, t FROM rk)), rs AS (SELECT it, CAST(SUM(r2) AS BIGINT) AS rr2 FROM r2t GROUP BY 1), s4 AS (SELECT SUM(CAST((rr2 - m * (n + 1)) * (rr2 - m * (n + 1)) AS HUGEINT)) AS s4 FROM rs, dims), f AS (SELECT m, n, s4, CAST(m AS DOUBLE) * CAST(m AS DOUBLE) * (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - CAST(n AS DOUBLE)) - CAST(m AS DOUBLE) * CAST(tsum AS DOUBLE) AS den FROM s4, dims, tie) SELECT m, n, CASE WHEN den > 0.0 THEN round(3.0 * CAST(s4 AS DOUBLE) / den, 6) END AS kendall_w, CASE WHEN den > 0.0 THEN round(CAST(m AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) * (3.0 * CAST(s4 AS DOUBLE) / den), 6) END AS friedman_chi2 FROM f""",
-    // integer template-match censuses per key, ln the only libm call
-    "q619_sample_entropy" ->
-      """WITH h AS (SELECT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id, COUNT(*) AS n FROM events GROUP BY 1, 2), b0 AS (SELECT event_type AS k, CAST(n AS BIGINT) AS v, hour_id FROM h), base AS (SELECT k, v, CAST(ROW_NUMBER() OVER w AS BIGINT) AS i, LEAD(v, 1) OVER w AS v1, LEAD(v, 2) OVER w AS v2 FROM b0 WINDOW w AS (PARTITION BY k ORDER BY hour_id)), bb AS (SELECT * FROM base WHERE v2 IS NOT NULL), pr AS (SELECT a.k, a.v2 AS x2, b.v2 AS w2 FROM bb a JOIN bb b ON a.k = b.k AND a.i < b.i AND abs(a.v - b.v) <= 20 AND abs(a.v1 - b.v1) <= 20), ag AS (SELECT k, COUNT(*) AS b_matches, CAST(SUM(CASE WHEN abs(x2 - w2) <= 20 THEN 1 ELSE 0 END) AS BIGINT) AS a_matches FROM pr GROUP BY 1) SELECT k AS event_type, b_matches, a_matches, CASE WHEN a_matches > 0 AND b_matches > 0 THEN round(-ln(CAST(a_matches AS DOUBLE) / CAST(b_matches AS DOUBLE)), 6) + 0.0 END AS sampen FROM ag ORDER BY event_type""",
-    // every cell's 2×2 by margin subtraction, pinned CI log terms
-    "q621_disproportionality" ->
-      """WITH cen AS (SELECT source AS seg, lang AS "out", COUNT(*) AS a FROM documents GROUP BY 1, 2), t AS (SELECT seg, "out", a, SUM(a) OVER (PARTITION BY seg) AS rt, SUM(a) OVER (PARTITION BY "out") AS ct, SUM(a) OVER () AS nn FROM cen), b AS (SELECT seg, "out", CAST(a AS BIGINT) AS a, CAST(rt AS BIGINT) AS rt, CAST(ct AS BIGINT) AS ct, CAST(rt - a AS BIGINT) AS bb, CAST(ct - a AS BIGINT) AS cc, CAST(nn - rt - ct + a AS BIGINT) AS dd FROM t), f AS (SELECT *, (CAST(a AS DOUBLE) / CAST(rt AS DOUBLE)) / (CAST(cc AS DOUBLE) / (CAST(cc AS DOUBLE) + CAST(dd AS DOUBLE))) AS prr, round(ln(CAST(a AS DOUBLE) * CAST(dd AS DOUBLE) / (CAST(bb AS DOUBLE) * CAST(cc AS DOUBLE))), 9) AS lor, round(sqrt(1.0 / CAST(a AS DOUBLE) + 1.0 / CAST(bb AS DOUBLE) + 1.0 / CAST(cc AS DOUBLE) + 1.0 / CAST(dd AS DOUBLE)), 9) AS se FROM b) SELECT seg, "out", a AS n_cell, rt AS n_segment, ct AS n_outcome, CASE WHEN a > 0 AND cc > 0 THEN round(prr, 6) END AS prr, CASE WHEN a > 0 AND cc > 0 AND bb > 0 AND dd > 0 THEN round(CAST(a AS DOUBLE) * CAST(dd AS DOUBLE) / (CAST(bb AS DOUBLE) * CAST(cc AS DOUBLE)), 6) END AS ror, CASE WHEN a > 0 AND cc > 0 AND bb > 0 AND dd > 0 THEN round(exp(lor - 1.96 * se), 6) END AS ror_lo, CASE WHEN a > 0 AND cc > 0 AND bb > 0 AND dd > 0 THEN round(exp(lor + 1.96 * se), 6) END AS ror_hi, CASE WHEN a > 0 AND cc > 0 AND bb > 0 AND dd > 0 THEN (a >= 3 AND prr >= 2.0 AND exp(lor - 1.96 * se) > 1.0) END AS signal FROM f ORDER BY seg, "out"""",
-    // q443's pinned MH terms, the closed-form quadratic root per
-    // stratum, pinned BD terms
-    "q622_breslow_day" ->
-      """WITH cen AS (SELECT CAST(year(o_orderdate) AS BIGINT) AS st, CAST(SUM(CASE WHEN substr(o_orderpriority, 1, 1) IN ('1', '2') AND o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS a, CAST(SUM(CASE WHEN substr(o_orderpriority, 1, 1) IN ('1', '2') AND o_orderstatus <> 'F' THEN 1 ELSE 0 END) AS BIGINT) AS b, CAST(SUM(CASE WHEN substr(o_orderpriority, 1, 1) NOT IN ('1', '2') AND o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS c, CAST(SUM(CASE WHEN substr(o_orderpriority, 1, 1) NOT IN ('1', '2') AND o_orderstatus <> 'F' THEN 1 ELSE 0 END) AS BIGINT) AS d FROM orders GROUP BY 1), c2 AS (SELECT *, a + b + c + d AS nn FROM cen), mh AS (SELECT SUM(CAST(round(CAST(a AS DOUBLE) * CAST(d AS DOUBLE) / CAST(nn AS DOUBLE), 9) AS DECIMAL(18,9))) AS rr, SUM(CAST(round(CAST(b AS DOUBLE) * CAST(c AS DOUBLE) / CAST(nn AS DOUBLE), 9) AS DECIMAL(18,9))) AS ss FROM c2), g AS (SELECT c2.*, CAST(rr AS DOUBLE) / CAST(ss AS DOUBLE) AS or0 FROM c2, mh), q AS (SELECT *, CAST(a + b AS DOUBLE) AS n1, CAST(c + d AS DOUBLE) AS n2, CAST(a + c AS DOUBLE) AS m1, or0 - 1.0 AS qa FROM g), q2 AS (SELECT *, -(or0 * (n1 + m1) + (n2 - m1)) AS qb, or0 * n1 * m1 AS qc, greatest(0.0, m1 - n2) AS lo, least(n1, m1) AS hi FROM q), q3 AS (SELECT *, sqrt(qb * qb - 4.0 * qa * qc) AS disc FROM q2), q4 AS (SELECT *, CASE WHEN abs(qa) < 1e-9 THEN -qc / qb ELSE (CASE WHEN (-qb - disc) / (2.0 * qa) > lo AND (-qb - disc) / (2.0 * qa) < hi THEN (-qb - disc) / (2.0 * qa) ELSE (-qb + disc) / (2.0 * qa) END) END AS e FROM q3), q5 AS (SELECT *, (a + b > 0 AND c + d > 0 AND a + c > 0 AND b + d > 0) AS informative FROM q4), sw AS (SELECT or0, CASE WHEN informative AND e > lo AND e < hi THEN CAST(round((CAST(a AS DOUBLE) - e) * (CAST(a AS DOUBLE) - e) * (1.0 / e + 1.0 / (n1 - e) + 1.0 / (m1 - e) + 1.0 / (n2 - m1 + e)), 9) AS DECIMAL(28,9)) END AS t, CASE WHEN informative AND e > lo AND e < hi THEN 1 ELSE 0 END AS inf FROM q5), f AS (SELECT or0, CAST(COUNT(*) AS BIGINT) AS k, CAST(SUM(inf) AS BIGINT) AS k_inf, SUM(t) AS bd FROM sw GROUP BY 1) SELECT k AS n_strata, k_inf AS n_informative, round(or0, 6) AS or_mh, CASE WHEN k_inf > 1 THEN k_inf - 1 END AS df, CASE WHEN k_inf > 1 THEN round(CAST(bd AS DOUBLE), 6) END AS bd_chi2 FROM f""",
-    // pinned daily log returns, exact decimal moment sums
-    "q624_sharpe_sortino" ->
-      """WITH d0 AS (SELECT event_type AS k, CAST(epoch_ns(ts) // 1000000000 // 86400 AS BIGINT) AS day FROM events), dc AS (SELECT k, day, COUNT(*) AS v FROM d0 GROUP BY 1, 2), r0 AS (SELECT k, CAST(v AS BIGINT) AS v, LAG(CAST(v AS BIGINT)) OVER (PARTITION BY k ORDER BY day) AS pv FROM dc), rr AS (SELECT k, CAST(round(ln(CAST(v AS DOUBLE) / CAST(pv AS DOUBLE)), 9) AS DECIMAL(18,9)) AS r FROM r0 WHERE pv IS NOT NULL AND pv > 0 AND v > 0), cen AS (SELECT k, COUNT(*) AS n, SUM(r) AS sr, SUM(CAST(round(CAST(r AS DOUBLE) * CAST(r AS DOUBLE), 9) AS DECIMAL(28,9))) AS srr, SUM(CASE WHEN r < 0 THEN CAST(round(CAST(r AS DOUBLE) * CAST(r AS DOUBLE), 9) AS DECIMAL(28,9)) ELSE CAST(0 AS DECIMAL(28,9)) END) AS sneg FROM rr GROUP BY 1 HAVING COUNT(*) >= 3), f AS (SELECT k, CAST(n AS BIGINT) AS n, CAST(sr AS DOUBLE) / CAST(n AS DOUBLE) AS mean, (CAST(srr AS DOUBLE) - CAST(n AS DOUBLE) * (CAST(sr AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(sr AS DOUBLE) / CAST(n AS DOUBLE))) / (CAST(n AS DOUBLE) - 1.0) AS vr, sqrt(CAST(sneg AS DOUBLE) / CAST(n AS DOUBLE)) AS dd FROM cen) SELECT k AS event_type, n AS n_returns, round(mean, 6) AS mean_return, CASE WHEN vr > 0.0 THEN round(sqrt(vr), 6) END AS volatility, round(dd, 6) AS downside_dev, CASE WHEN vr > 0.0 THEN round(mean / sqrt(vr), 6) END AS sharpe, CASE WHEN dd > 0.0 THEN round(mean / dd, 6) END AS sortino FROM f ORDER BY event_type""",
-    // exact cents moments + the exact out-of-spec count
-    "q625_process_capability" ->
-      """WITH v AS (SELECT o_orderpriority AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c FROM orders), cen AS (SELECT g, COUNT(*) AS n, SUM(CAST(c AS HUGEINT)) AS s, SUM(CAST(c AS HUGEINT) * CAST(c AS HUGEINT)) AS ss, CAST(SUM(CASE WHEN c < 5000000 OR c > 35000000 THEN 1 ELSE 0 END) AS BIGINT) AS oos FROM v GROUP BY 1 HAVING COUNT(*) >= 2), f AS (SELECT g, CAST(n AS BIGINT) AS n, CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS mean, sqrt((CAST(ss AS DOUBLE) - CAST(n AS DOUBLE) * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))) / (CAST(n AS DOUBLE) - 1.0)) AS sd, oos FROM cen) SELECT g, n, round(mean, 6) AS mean, CASE WHEN sd > 0.0 THEN round(sd, 6) END AS sd, CASE WHEN sd > 0.0 THEN round((35000000.0 - 5000000.0) / (6.0 * sd), 6) END AS pp, CASE WHEN sd > 0.0 THEN round(least(35000000.0 - mean, mean - 5000000.0) / (3.0 * sd), 6) END AS ppk, round(CAST(oos AS DOUBLE) / CAST(n AS DOUBLE), 6) AS oos_share FROM f ORDER BY g""",
-    // value census + cumulative windows; the straddling tie group
-    // apportions x·(k−c) exactly — integer decile cuts end to end
-    "q626_lorenz_curve" ->
-      """WITH v AS (SELECT o_orderpriority AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x FROM orders), cen AS (SELECT g, x, COUNT(*) AS t FROM v GROUP BY 1, 2), rk AS (SELECT g, x, CAST(t AS BIGINT) AS t, CAST(SUM(t) OVER w AS BIGINT) AS c, CAST(SUM(CAST(x AS DECIMAL(38,0)) * t) OVER w AS DECIMAL(38,0)) AS s FROM cen WINDOW w AS (PARTITION BY g ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), tot AS (SELECT g, MAX(c) AS n, MAX(s) AS stot FROM rk GROUP BY 1), sp AS (SELECT g, n, stot, CAST(unnest(range(1, 11)) AS BIGINT) AS d FROM tot), sp2 AS (SELECT g, n, stot, d, (n * d) // 10 AS k FROM sp), hit AS (SELECT sp2.g, sp2.d, sp2.n, sp2.stot, sp2.k, rk.s + CAST(rk.x AS DECIMAL(38,0)) * (sp2.k - rk.c) AS cumv FROM sp2 JOIN rk ON rk.g = sp2.g AND rk.c - rk.t < sp2.k AND sp2.k <= rk.c WHERE sp2.k > 0 UNION ALL SELECT g, d, n, stot, k, CAST(0 AS DECIMAL(38,0)) FROM sp2 WHERE k = 0) SELECT g, d AS decile, n AS n_units, k AS k_units, CAST(cumv AS BIGINT) AS cum_value, round(CAST(d AS DOUBLE) / 10.0, 6) AS pop_share, CASE WHEN stot <> 0 THEN round(CAST(cumv AS DOUBLE) / CAST(stot AS DOUBLE), 6) END AS value_share FROM hit ORDER BY g, decile""",
-    // per-key exact moments, pinned ln points on the 1e-9 grid,
-    // decimal-summed term products, one pinned-double OLS finish
-    "q627_taylor_law" ->
-      """WITH e AS (SELECT concat(event_type, ':', CAST(epoch_ns(ts) // 1000000000 // 3600 % 24 AS VARCHAR)) AS k, CAST(epoch_ns(ts) // 1000000000 // 86400 AS BIGINT) AS day FROM events), dc AS (SELECT k, day, COUNT(*) AS v FROM e GROUP BY 1, 2), cen AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(v AS DECIMAL(38,0))) AS s, SUM(CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))) AS ss FROM dc GROUP BY 1 HAVING COUNT(*) >= 2), mv AS (SELECT k, CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS m, (CAST(ss AS DOUBLE) - CAST(n AS DOUBLE) * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(s AS DOUBLE) / CAST(n AS DOUBLE))) / (CAST(n AS DOUBLE) - 1.0) AS vv FROM cen), pts AS (SELECT CAST(round(ln(m), 9) AS DECIMAL(28,9)) AS lx, CAST(round(ln(vv), 9) AS DECIMAL(28,9)) AS ly FROM mv WHERE m > 0.0 AND vv > 0.0), p2 AS (SELECT lx, ly, CAST(round(CAST(lx AS DOUBLE) * CAST(lx AS DOUBLE), 9) AS DECIMAL(28,9)) AS xx, CAST(round(CAST(lx AS DOUBLE) * CAST(ly AS DOUBLE), 9) AS DECIMAL(28,9)) AS xy, CAST(round(CAST(ly AS DOUBLE) * CAST(ly AS DOUBLE), 9) AS DECIMAL(28,9)) AS yy FROM pts), f AS (SELECT CAST(COUNT(*) AS BIGINT) AS np, SUM(lx) AS sx, SUM(ly) AS sy, SUM(xx) AS sxx, SUM(xy) AS sxy, SUM(yy) AS syy FROM p2), g AS (SELECT np, CAST(sx AS DOUBLE) AS sx, CAST(sy AS DOUBLE) AS sy, CAST(np AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS cxx, CAST(np AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS cxy, CAST(np AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS cyy FROM f) SELECT np AS n_points, CASE WHEN np >= 3 AND cxx > 0.0 THEN round(cxy / cxx, 6) END AS slope, CASE WHEN np >= 3 AND cxx > 0.0 THEN round((sy - cxy / cxx * sx) / CAST(np AS DOUBLE), 6) END AS intercept, CASE WHEN np >= 3 AND cxx > 0.0 AND cyy > 0.0 THEN round(cxy * cxy / (cxx * cyy), 6) END AS r2 FROM g""",
-    // one lag pass, exact DECIMAL(38,0) moments, centered cross-forms,
-    // the 5% constant-only critical value as a shared literal
-    "q628_dickey_fuller" ->
-      """WITH h AS (SELECT event_type AS k, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hid, CAST(COUNT(*) AS BIGINT) AS v FROM events GROUP BY 1, 2), o AS (SELECT k, v AS x, LEAD(v) OVER (PARTITION BY k ORDER BY hid) AS nx FROM h), p AS (SELECT k, x, nx - x AS d FROM o WHERE nx IS NOT NULL), f AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(d AS DECIMAL(38,0))) AS sd, SUM(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))) AS sxx, SUM(CAST(x AS DECIMAL(38,0)) * CAST(d AS DECIMAL(38,0))) AS sxd, SUM(CAST(d AS DECIMAL(38,0)) * CAST(d AS DECIMAL(38,0))) AS sdd FROM p GROUP BY 1 HAVING COUNT(*) >= 4), g AS (SELECT k, n, CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS cxx, CAST(n AS DOUBLE) * CAST(sxd AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sd AS DOUBLE) AS cxy, CAST(n AS DOUBLE) * CAST(sdd AS DOUBLE) - CAST(sd AS DOUBLE) * CAST(sd AS DOUBLE) AS cyy FROM f), g2 AS (SELECT k, n, cxx, cxy, cxy / cxx AS rho, (cyy - cxy * cxy / cxx) / CAST(n AS DOUBLE) AS sse FROM g), g3 AS (SELECT k, n, cxx, sse, rho, sqrt(sse / (CAST(n AS DOUBLE) - 2.0) * CAST(n AS DOUBLE) / cxx) AS se FROM g2) SELECT k AS event_type, n AS n_diffs, CASE WHEN cxx > 0.0 AND sse > 0.0 THEN round(rho, 6) END AS rho, CASE WHEN cxx > 0.0 AND sse > 0.0 THEN round(rho / se, 6) END AS df_stat, CASE WHEN cxx > 0.0 AND sse > 0.0 THEN rho / se < -2.86 END AS stationary FROM g3 ORDER BY k""",
-    // zero-filled shared spine, one lag pass, the 2x2 normal equations
-    // closed-form, pinned-double F finish, both directions
-    "q629_granger" ->
-      """WITH h AS (SELECT CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hh, event_type FROM events), b AS (SELECT MIN(hh) AS lo, MAX(hh) AS hi FROM h), sp AS (SELECT CAST(unnest(range((SELECT lo FROM b), (SELECT hi FROM b) + 1)) AS BIGINT) AS hh), cen AS (SELECT hh, CAST(SUM(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS x, CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS y FROM h GROUP BY 1), fr AS (SELECT sp.hh, COALESCE(cen.x, 0) AS x, COALESCE(cen.y, 0) AS y FROM sp LEFT JOIN cen USING (hh)), lg AS (SELECT hh, x, y, LAG(x) OVER (ORDER BY hh) AS xl, LAG(y) OVER (ORDER BY hh) AS yl FROM fr), rws AS (SELECT * FROM lg WHERE xl IS NOT NULL), mom AS (SELECT 'x->y' AS direction, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(y AS DECIMAL(38,0))) AS sy, SUM(CAST(yl AS DECIMAL(38,0))) AS s1, SUM(CAST(xl AS DECIMAL(38,0))) AS s2, SUM(CAST(y AS DECIMAL(38,0)) * CAST(y AS DECIMAL(38,0))) AS syy, SUM(CAST(y AS DECIMAL(38,0)) * CAST(yl AS DECIMAL(38,0))) AS sy1, SUM(CAST(y AS DECIMAL(38,0)) * CAST(xl AS DECIMAL(38,0))) AS sy2, SUM(CAST(yl AS DECIMAL(38,0)) * CAST(yl AS DECIMAL(38,0))) AS s11, SUM(CAST(xl AS DECIMAL(38,0)) * CAST(xl AS DECIMAL(38,0))) AS s22, SUM(CAST(yl AS DECIMAL(38,0)) * CAST(xl AS DECIMAL(38,0))) AS s12 FROM rws UNION ALL SELECT 'y->x', CAST(COUNT(*) AS BIGINT), SUM(CAST(x AS DECIMAL(38,0))), SUM(CAST(xl AS DECIMAL(38,0))), SUM(CAST(yl AS DECIMAL(38,0))), SUM(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))), SUM(CAST(x AS DECIMAL(38,0)) * CAST(xl AS DECIMAL(38,0))), SUM(CAST(x AS DECIMAL(38,0)) * CAST(yl AS DECIMAL(38,0))), SUM(CAST(xl AS DECIMAL(38,0)) * CAST(xl AS DECIMAL(38,0))), SUM(CAST(yl AS DECIMAL(38,0)) * CAST(yl AS DECIMAL(38,0))), SUM(CAST(xl AS DECIMAL(38,0)) * CAST(yl AS DECIMAL(38,0))) FROM rws), cc AS (SELECT direction, n, CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS cyy, CAST(n AS DOUBLE) * CAST(s11 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) AS c11, CAST(n AS DOUBLE) * CAST(s22 AS DOUBLE) - CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE) AS c22, CAST(n AS DOUBLE) * CAST(s12 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s2 AS DOUBLE) AS c12, CAST(n AS DOUBLE) * CAST(sy1 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(sy AS DOUBLE) AS c1y, CAST(n AS DOUBLE) * CAST(sy2 AS DOUBLE) - CAST(s2 AS DOUBLE) * CAST(sy AS DOUBLE) AS c2y FROM mom), dd AS (SELECT direction, n, cyy, c11, (cyy - c1y * c1y / c11) / CAST(n AS DOUBLE) AS sser, c11 * c22 - c12 * c12 AS det, (c1y * c22 - c2y * c12) / (c11 * c22 - c12 * c12) AS b1, (c2y * c11 - c1y * c12) / (c11 * c22 - c12 * c12) AS b2, c1y, c2y FROM cc), ee AS (SELECT direction, n, c11, det, sser, b2, (cyy - b1 * c1y - b2 * c2y) / CAST(n AS DOUBLE) AS sseu FROM dd) SELECT direction, n, CASE WHEN n >= 5 AND c11 > 0.0 AND det > 0.0 AND sseu > 0.0 THEN round(b2, 6) END AS lag_coef, CASE WHEN n >= 5 AND c11 > 0.0 AND det > 0.0 AND sseu > 0.0 THEN round(sser, 6) END AS sse_restricted, CASE WHEN n >= 5 AND c11 > 0.0 AND det > 0.0 AND sseu > 0.0 THEN round(sseu, 6) END AS sse_unrestricted, CASE WHEN n >= 5 AND c11 > 0.0 AND det > 0.0 AND sseu > 0.0 THEN round((sser - sseu) / (sseu / (CAST(n AS DOUBLE) - 3.0)), 6) END AS f_stat FROM ee ORDER BY direction""",
-    // md5 treatment split, midpoint period split, four-cell census,
-    // pooled binomial SE
-    "q630_did" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS sec, CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS y FROM events), m AS (SELECT (MIN(sec) + MAX(sec)) // 2 AS mid FROM e), r AS (SELECT CAST(concat('0x', substr(md5(concat('dd:', CAST(user_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 = 1 AS tr, sec > (SELECT mid FROM m) AS po, y FROM e), cen AS (SELECT CAST(SUM(CASE WHEN tr AND po THEN 1 ELSE 0 END) AS BIGINT) AS n11, CAST(SUM(CASE WHEN tr AND po THEN y ELSE 0 END) AS BIGINT) AS e11, CAST(SUM(CASE WHEN tr AND NOT po THEN 1 ELSE 0 END) AS BIGINT) AS n10, CAST(SUM(CASE WHEN tr AND NOT po THEN y ELSE 0 END) AS BIGINT) AS e10, CAST(SUM(CASE WHEN NOT tr AND po THEN 1 ELSE 0 END) AS BIGINT) AS n01, CAST(SUM(CASE WHEN NOT tr AND po THEN y ELSE 0 END) AS BIGINT) AS e01, CAST(SUM(CASE WHEN NOT tr AND NOT po THEN 1 ELSE 0 END) AS BIGINT) AS n00, CAST(SUM(CASE WHEN NOT tr AND NOT po THEN y ELSE 0 END) AS BIGINT) AS e00 FROM r), p AS (SELECT *, CAST(e11 AS DOUBLE) / CAST(n11 AS DOUBLE) AS p11, CAST(e10 AS DOUBLE) / CAST(n10 AS DOUBLE) AS p10, CAST(e01 AS DOUBLE) / CAST(n01 AS DOUBLE) AS p01, CAST(e00 AS DOUBLE) / CAST(n00 AS DOUBLE) AS p00 FROM cen), q AS (SELECT *, (p11 - p10) - (p01 - p00) AS did, sqrt(p11 * (1.0 - p11) / CAST(n11 AS DOUBLE) + p10 * (1.0 - p10) / CAST(n10 AS DOUBLE) + p01 * (1.0 - p01) / CAST(n01 AS DOUBLE) + p00 * (1.0 - p00) / CAST(n00 AS DOUBLE)) AS se, n11 > 0 AND n10 > 0 AND n01 > 0 AND n00 > 0 AS ok FROM p) SELECT n11, n10, n01, n00, CASE WHEN ok THEN round(p10, 6) END AS rate_treat_pre, CASE WHEN ok THEN round(p11, 6) END AS rate_treat_post, CASE WHEN ok THEN round(p00, 6) END AS rate_ctrl_pre, CASE WHEN ok THEN round(p01, 6) END AS rate_ctrl_post, CASE WHEN ok THEN round(did, 6) END AS did, CASE WHEN ok AND se > 0.0 THEN round(se, 6) END AS se, CASE WHEN ok AND se > 0.0 THEN round(did / se, 6) END AS z FROM q""",
-    // integer Hamilton apportionment: floor quotas, leftover to the
-    // largest remainders, one pinned share division
-    "q631_mixture_quota" ->
-      """WITH cen AS (SELECT source AS g, CAST(COUNT(*) AS BIGINT) AS c FROM documents GROUP BY 1), t AS (SELECT g, c, CAST(SUM(c) OVER () AS BIGINT) AS nt FROM cen), q AS (SELECT g, c, nt, CAST(10000 AS HUGEINT) * c AS num FROM t), q2 AS (SELECT g, c, nt, num % nt AS rem, CAST(num // nt AS BIGINT) AS base FROM q), q3 AS (SELECT *, 10000 - CAST(SUM(base) OVER () AS BIGINT) AS lft, CAST(ROW_NUMBER() OVER (ORDER BY rem DESC, g) AS BIGINT) AS rk FROM q2) SELECT g, c AS n, round(CAST(c AS DOUBLE) / CAST(nt AS DOUBLE), 6) AS share, base, base + CASE WHEN rk <= lft THEN 1 ELSE 0 END AS quota FROM q3 ORDER BY g""",
-    // doc-keyed position pair join, frequency-ranked vocabulary, the
-    // counter-based md5 negative draws replayed hash for hash
-    "q632_skipgram_pairs" ->
-      s"""$HASH_MACROS; WITH tk0 AS (SELECT doc_id, docwords(text) AS t FROM documents), tok AS (SELECT doc_id, CAST(i AS BIGINT) AS pos, t[CAST(i AS INTEGER) + 1] AS w FROM tk0, LATERAL (SELECT unnest(range(0, len(t))) AS i) u WHERE t[CAST(i AS INTEGER) + 1] <> ''), vv AS (SELECT w, COUNT(*) AS cnt FROM tok GROUP BY 1), rkv AS (SELECT w AS vw, CAST(ROW_NUMBER() OVER (ORDER BY cnt DESC, w) - 1 AS BIGINT) AS vid FROM vv), vn AS (SELECT CAST(COUNT(*) AS BIGINT) AS vn FROM rkv), pr AS (SELECT a.w AS center, b.w AS ctx, CAST(COUNT(*) AS BIGINT) AS n FROM tok a JOIN tok b ON a.doc_id = b.doc_id AND b.pos <> a.pos AND abs(b.pos - a.pos) <= 2 GROUP BY 1, 2), tp AS (SELECT center, ctx, n FROM pr ORDER BY n DESC, center, ctx LIMIT 200), nid AS (SELECT center, ctx, n, CAST(concat('0x', substr(md5(concat('ng:', center, ':', ctx, ':', '1')), 1, 13)) AS BIGINT) % (SELECT vn FROM vn) AS n1, CAST(concat('0x', substr(md5(concat('ng:', center, ':', ctx, ':', '2')), 1, 13)) AS BIGINT) % (SELECT vn FROM vn) AS n2 FROM tp) SELECT nid.center, nid.ctx AS context, nid.n, r1.vw AS neg1, r2.vw AS neg2 FROM nid JOIN rkv r1 ON r1.vid = nid.n1 JOIN rkv r2 ON r2.vid = nid.n2 ORDER BY nid.n DESC, nid.center, context""",
-    // q30's replace-shrinkage markers, per-row fixed-order entropy terms
-    "q559_lang_mixture" ->
-      """WITH p AS (SELECT doc_id, concat(' ', lower(text), ' ') AS t FROM documents), s AS (SELECT doc_id, CAST((length(t) - length(replace(t, ' the ', ' '))) / 4 + (length(t) - length(replace(t, ' a ', ' '))) / 2 AS BIGINT) AS se, CAST((length(t) - length(replace(t, ' der ', ' '))) / 4 + (length(t) - length(replace(t, ' und ', ' '))) / 4 AS BIGINT) AS sd, CAST((length(t) - length(replace(t, ' el ', ' '))) / 3 + (length(t) - length(replace(t, ' los ', ' '))) / 4 AS BIGINT) AS ss, CAST((length(t) - length(replace(t, ' le ', ' '))) / 3 + (length(t) - length(replace(t, ' et ', ' '))) / 3 AS BIGINT) AS sf FROM p), m AS (SELECT doc_id, se, sd, ss, sf, se + sd + ss + sf AS tot, (CASE WHEN se > 0 THEN 1 ELSE 0 END) + (CASE WHEN sd > 0 THEN 1 ELSE 0 END) + (CASE WHEN ss > 0 THEN 1 ELSE 0 END) + (CASE WHEN sf > 0 THEN 1 ELSE 0 END) AS nl FROM s), h AS (SELECT doc_id, tot, nl, se, sd, ss, sf, (CASE WHEN se > 0 THEN CAST(round(-(CAST(se AS DOUBLE) / CAST(tot AS DOUBLE) * ln(CAST(se AS DOUBLE) / CAST(tot AS DOUBLE))), 9) AS DECIMAL(18,9)) ELSE CAST(0 AS DECIMAL(18,9)) END) + (CASE WHEN sd > 0 THEN CAST(round(-(CAST(sd AS DOUBLE) / CAST(tot AS DOUBLE) * ln(CAST(sd AS DOUBLE) / CAST(tot AS DOUBLE))), 9) AS DECIMAL(18,9)) ELSE CAST(0 AS DECIMAL(18,9)) END) + (CASE WHEN ss > 0 THEN CAST(round(-(CAST(ss AS DOUBLE) / CAST(tot AS DOUBLE) * ln(CAST(ss AS DOUBLE) / CAST(tot AS DOUBLE))), 9) AS DECIMAL(18,9)) ELSE CAST(0 AS DECIMAL(18,9)) END) + (CASE WHEN sf > 0 THEN CAST(round(-(CAST(sf AS DOUBLE) / CAST(tot AS DOUBLE) * ln(CAST(sf AS DOUBLE) / CAST(tot AS DOUBLE))), 9) AS DECIMAL(18,9)) ELSE CAST(0 AS DECIMAL(18,9)) END) AS ent FROM m) SELECT doc_id, CAST(tot AS BIGINT) AS total_markers, CAST(nl AS BIGINT) AS n_langs, CASE WHEN tot > 0 THEN CAST(ent AS DOUBLE) END AS mix_entropy, (tot > 0 AND nl >= 2 AND CAST(greatest(se, sd, ss, sf) AS DOUBLE) / CAST(tot AS DOUBLE) <= 0.75) AS mixed FROM h ORDER BY doc_id""",
-    // the q519 KM chain partitioned by signup-week cohort
-    "q560_km_cohorts" ->
-      """WITH e AS (SELECT user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), b AS (SELECT MIN(sec) AS lo, MAX(sec) AS hi FROM e), u AS (SELECT user_id, MIN(sec) AS first, MAX(sec) AS last FROM e GROUP BY 1), lv AS (SELECT CAST((first - (SELECT lo FROM b)) // 604800 AS BIGINT) AS k, CAST((last - first) // 3600 AS BIGINT) AS t, CASE WHEN last > (SELECT lo + 2 * (hi - lo) // 3 FROM b) THEN 0 ELSE 1 END AS death FROM u), bt AS (SELECT k, t, CAST(SUM(death) AS BIGINT) AS d, CAST(SUM(1 - death) AS BIGINT) AS c, COUNT(*) AS n_t FROM lv GROUP BY 1, 2), rk AS (SELECT k, t, d, c, CAST(SUM(n_t) OVER (PARTITION BY k ORDER BY t ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT) AS n_risk FROM bt), f AS (SELECT k, t, d, c, n_risk, 1.0 - CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE) AS factor FROM rk), idx AS (SELECT k, t, ROW_NUMBER() OVER (PARTITION BY k ORDER BY t) AS i FROM f), arr AS (SELECT k, list(factor ORDER BY t) AS fs FROM f GROUP BY k) SELECT f.k AS cohort_week, f.t AS t, f.d AS n_death, f.c AS n_censored, f.n_risk, round(list_reduce(list_prepend(CAST(1 AS DOUBLE), fs[1:CAST(i AS INTEGER)]), (a, x) -> a * x), 6) AS survival FROM f JOIN idx ON f.k = idx.k AND f.t = idx.t JOIN arr ON f.k = arr.k ORDER BY cohort_week, f.t""",
-    // one class-size census, k spine broadcast over it
-    "q557_kanon_sweep" ->
-      """WITH sz AS (SELECT COUNT(*) AS s FROM customer GROUP BY c_nationkey, c_mktsegment), sc AS (SELECT s AS szv, COUNT(*) AS classes FROM sz GROUP BY 1), ks AS (SELECT CAST(unnest([2, 5, 10, 25]) AS BIGINT) AS k) SELECT k, CAST(SUM(classes) AS BIGINT) AS n_classes, CAST(SUM(CASE WHEN szv < k THEN classes ELSE 0 END) AS BIGINT) AS classes_suppressed, CAST(SUM(CASE WHEN szv < k THEN szv * classes ELSE 0 END) AS BIGINT) AS rows_suppressed, round(CAST(SUM(CASE WHEN szv < k THEN szv * classes ELSE 0 END) AS DOUBLE) / CAST(SUM(szv * classes) AS DOUBLE), 6) AS suppressed_share FROM sc, ks GROUP BY k ORDER BY k""",
-    // one census per declared combo, singleton shares
-    "q558_uniqueness_risk" ->
-      """WITH c AS (SELECT c_nationkey, c_mktsegment, CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) // 10000 AS bal_bucket FROM customer), a AS (SELECT 'nation' AS combo, COUNT(*) AS n_classes, SUM(szv) AS n_rows, SUM(CASE WHEN szv = 1 THEN 1 ELSE 0 END) AS n_singletons FROM (SELECT COUNT(*) AS szv FROM c GROUP BY c_nationkey)), b AS (SELECT 'nation_segment' AS combo, COUNT(*) AS n_classes, SUM(szv) AS n_rows, SUM(CASE WHEN szv = 1 THEN 1 ELSE 0 END) AS n_singletons FROM (SELECT COUNT(*) AS szv FROM c GROUP BY c_nationkey, c_mktsegment)), d AS (SELECT 'nation_segment_bal' AS combo, COUNT(*) AS n_classes, SUM(szv) AS n_rows, SUM(CASE WHEN szv = 1 THEN 1 ELSE 0 END) AS n_singletons FROM (SELECT COUNT(*) AS szv FROM c GROUP BY c_nationkey, c_mktsegment, bal_bucket)) SELECT combo, CAST(n_classes AS BIGINT) AS n_classes, CAST(n_singletons AS BIGINT) AS n_singletons, round(CAST(n_singletons AS DOUBLE) / CAST(n_rows AS DOUBLE), 6) AS unique_row_share FROM (SELECT * FROM a UNION ALL SELECT * FROM b UNION ALL SELECT * FROM d) ORDER BY combo""",
-    // exact ceiling-rank thresholds on both marginal censuses, one
-    // conditional exceedance pass with the percentile spine broadcast
-    "q556_tail_dependence" ->
-      """WITH b AS (SELECT CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS x, CAST(l_quantity AS BIGINT) AS y FROM lineitem), qs AS (SELECT CAST(unnest([90, 95, 99]) AS BIGINT) AS pct), px AS (SELECT v, SUM(t) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw, SUM(t) OVER () AS n FROM (SELECT x AS v, COUNT(*) AS t FROM b GROUP BY 1)), tx AS (SELECT pct, MIN(CASE WHEN cw >= (pct * n + 99) // 100 THEN v END) AS tx FROM px, qs GROUP BY pct), py AS (SELECT v, SUM(t) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw, SUM(t) OVER () AS n FROM (SELECT y AS v, COUNT(*) AS t FROM b GROUP BY 1)), ty AS (SELECT pct, MIN(CASE WHEN cw >= (pct * n + 99) // 100 THEN v END) AS ty FROM py, qs GROUP BY pct), th AS (SELECT tx.pct, tx.tx, ty.ty FROM tx JOIN ty ON tx.pct = ty.pct) SELECT th.pct, th.tx AS x_thresh, th.ty AS y_thresh, CAST(SUM(CASE WHEN b.y > th.ty THEN 1 ELSE 0 END) AS BIGINT) AS n_y_exceed, CAST(SUM(CASE WHEN b.x > th.tx AND b.y > th.ty THEN 1 ELSE 0 END) AS BIGINT) AS n_joint, CASE WHEN SUM(CASE WHEN b.y > th.ty THEN 1 ELSE 0 END) > 0 THEN round(CAST(SUM(CASE WHEN b.x > th.tx AND b.y > th.ty THEN 1 ELSE 0 END) AS DOUBLE) / CAST(SUM(CASE WHEN b.y > th.ty THEN 1 ELSE 0 END) AS DOUBLE), 6) END AS lambda_u FROM b, th GROUP BY 1, 2, 3 ORDER BY 1""",
-    // both foreign chains survive the re-export: per-priority counts of
-    // the even-key commit vs the full table
-    "q554_iceberg_time_travel" ->
-      """WITH o AS (SELECT o_orderkey, o_orderpriority FROM orders), v1 AS (SELECT o_orderpriority, COUNT(*) AS n_v1 FROM o WHERE o_orderkey % 2 = 0 GROUP BY 1), v2 AS (SELECT o_orderpriority, COUNT(*) AS n_v2 FROM o GROUP BY 1) SELECT v1.o_orderpriority, v1.n_v1, v2.n_v2, v2.n_v2 - v1.n_v1 AS added FROM v1 JOIN v2 ON v1.o_orderpriority = v2.o_orderpriority ORDER BY 1""",
-    // per-stratum (d, var) pairs packed stratum-sorted; every sum folds
-    // sequentially (inverse-variance weights live below any usable grid)
-    "q552_meta_analysis" ->
-      """WITH e AS (SELECT o_orderpriority AS s, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v, CAST(concat('0x', substr(md5(concat('att:', CAST(o_orderkey AS VARCHAR))), 1, 13)) AS BIGINT) % 2 = 0 AS isa FROM orders), cen AS (SELECT s, CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS n1, CAST(SUM(CASE WHEN NOT isa THEN 1 ELSE 0 END) AS BIGINT) AS n0, SUM(CASE WHEN isa THEN CAST(v AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS s1, SUM(CASE WHEN NOT isa THEN CAST(v AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS s0, SUM(CASE WHEN isa THEN CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS ss1, SUM(CASE WHEN NOT isa THEN CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS ss0 FROM e GROUP BY 1), fl AS (SELECT s, round(CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) - CAST(s0 AS DOUBLE) / CAST(n0 AS DOUBLE), 3) AS d, round((CAST(n1 AS DOUBLE) * CAST(ss1 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) * (CAST(n1 AS DOUBLE) - 1.0)) / CAST(n1 AS DOUBLE) + (CAST(n0 AS DOUBLE) * CAST(ss0 AS DOUBLE) - CAST(s0 AS DOUBLE) * CAST(s0 AS DOUBLE)) / (CAST(n0 AS DOUBLE) * (CAST(n0 AS DOUBLE) - 1.0)) / CAST(n0 AS DOUBLE), 3) AS vv FROM cen WHERE n1 > 1 AND n0 > 1), ar AS (SELECT list(struct_pack(d := d, vv := vv) ORDER BY s) AS rows FROM fl WHERE vv > 0.0), sm AS (SELECT CAST(len(rows) AS BIGINT) AS k, list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(rows, x -> 1.0 / x.vv)), (a, b) -> a + b) AS sw, list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(rows, x -> x.d / x.vv)), (a, b) -> a + b) AS swd, list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(rows, x -> x.d * x.d / x.vv)), (a, b) -> a + b) AS swd2, list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(rows, x -> 1.0 / x.vv / x.vv)), (a, b) -> a + b) AS sw2, rows FROM ar), f2 AS (SELECT k, sw, swd, swd2, sw2, rows, greatest(((swd2 - swd * swd / sw) - (CAST(k AS DOUBLE) - 1.0)) / (sw - sw2 / sw), 0.0) AS t FROM sm) SELECT k, round(swd / sw, 6) AS d_fixed, round(swd2 - swd * swd / sw, 6) AS q_stat, round(greatest(((swd2 - swd * swd / sw) - (CAST(k AS DOUBLE) - 1.0)) / (swd2 - swd * swd / sw), 0.0), 6) AS i2, round(t, 6) AS tau2, round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(rows, x -> x.d / (x.vv + t))), (a, b) -> a + b) / list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(rows, x -> 1.0 / (x.vv + t))), (a, b) -> a + b), 6) AS d_random, round(sqrt(1.0 / list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(rows, x -> 1.0 / (x.vv + t))), (a, b) -> a + b)), 6) AS se_random FROM f2""",
-    // per-stratum conditional moments, treated-share weights, grid terms
-    "q551_strata_att" ->
-      """WITH e AS (SELECT o_orderpriority AS s, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v, CAST(concat('0x', substr(md5(concat('att:', CAST(o_orderkey AS VARCHAR))), 1, 13)) AS BIGINT) % 2 = 0 AS isa FROM orders), cen AS (SELECT s, CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS n1, CAST(SUM(CASE WHEN NOT isa THEN 1 ELSE 0 END) AS BIGINT) AS n0, SUM(CASE WHEN isa THEN CAST(v AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS s1, SUM(CASE WHEN NOT isa THEN CAST(v AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS s0, SUM(CASE WHEN isa THEN CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS ss1, SUM(CASE WHEN NOT isa THEN CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS ss0 FROM e GROUP BY 1), us AS (SELECT * FROM cen WHERE n1 > 0 AND n0 > 0), dr AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_strata_dropped, CAST(COALESCE(SUM(n1), 0) AS BIGINT) AS treated_dropped FROM cen WHERE NOT (n1 > 0 AND n0 > 0)), st AS (SELECT n1, CAST(round(CAST(n1 AS DOUBLE) / CAST(SUM(n1) OVER () AS DOUBLE) * (CAST(s1 AS DOUBLE) / CAST(n1 AS DOUBLE) - CAST(s0 AS DOUBLE) / CAST(n0 AS DOUBLE)), 6) AS DECIMAL(18,6)) AS at, CAST(CASE WHEN n1 > 1 AND n0 > 1 THEN round(CAST(n1 AS DOUBLE) / CAST(SUM(n1) OVER () AS DOUBLE) * (CAST(n1 AS DOUBLE) / CAST(SUM(n1) OVER () AS DOUBLE)) * ((CAST(n1 AS DOUBLE) * CAST(ss1 AS DOUBLE) - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)) / (CAST(n1 AS DOUBLE) * (CAST(n1 AS DOUBLE) - 1.0)) / CAST(n1 AS DOUBLE) + (CAST(n0 AS DOUBLE) * CAST(ss0 AS DOUBLE) - CAST(s0 AS DOUBLE) * CAST(s0 AS DOUBLE)) / (CAST(n0 AS DOUBLE) * (CAST(n0 AS DOUBLE) - 1.0)) / CAST(n0 AS DOUBLE)), 6) END AS DECIMAL(28,6)) AS sterm FROM us), ag AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_strata_used, CAST(SUM(n1) AS BIGINT) AS n_treated, CAST(SUM(at) AS DOUBLE) AS a, CAST(SUM(sterm) AS DOUBLE) AS ssum, SUM(CASE WHEN sterm IS NULL THEN 1 ELSE 0 END) AS bad FROM st) SELECT ag.n_strata_used, dr.n_strata_dropped, ag.n_treated, dr.treated_dropped, round(ag.a, 6) AS att, CASE WHEN ag.bad = 0 THEN round(sqrt(ag.ssum), 6) END AS se, CASE WHEN ag.bad = 0 AND round(sqrt(ag.ssum), 6) > 0.0 THEN round(round(ag.a, 6) / round(sqrt(ag.ssum), 6), 6) END AS z FROM ag, dr""",
-    // the q519 KM chain + Greenwood running variance, bands off the
-    // ROUNDED se
-    "q547_km_greenwood" ->
-      """WITH e AS (SELECT user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), b AS (SELECT MIN(sec) AS lo, MAX(sec) AS hi FROM e), u AS (SELECT user_id, MIN(sec) AS first, MAX(sec) AS last FROM e GROUP BY 1), lv AS (SELECT CAST((last - first) // 3600 AS BIGINT) AS t, CASE WHEN last > (SELECT lo + 2 * (hi - lo) // 3 FROM b) THEN 0 ELSE 1 END AS death FROM u), bt AS (SELECT t, CAST(SUM(death) AS BIGINT) AS d, COUNT(*) AS n_t FROM lv GROUP BY 1), rk AS (SELECT t, d, CAST(SUM(n_t) OVER (ORDER BY t ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT) AS n_risk FROM bt), f AS (SELECT t, d, n_risk, 1.0 - CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE) AS factor FROM rk), idx AS (SELECT t, ROW_NUMBER() OVER (ORDER BY t) AS i FROM f), arr AS (SELECT list(factor ORDER BY t) AS fs FROM f), km AS (SELECT f.t, f.d, f.n_risk, round(list_reduce(list_prepend(CAST(1 AS DOUBLE), fs[1:CAST(i AS INTEGER)]), (a, x) -> a * x), 6) AS survival FROM f JOIN idx ON f.t = idx.t, arr), gw AS (SELECT t, d, n_risk, survival, CASE WHEN n_risk > d THEN CAST(round(CAST(d AS DOUBLE) / (CAST(n_risk AS DOUBLE) * (CAST(n_risk AS DOUBLE) - CAST(d AS DOUBLE))), 9) AS DECIMAL(28,9)) END AS inc FROM km), g2 AS (SELECT t, d, n_risk, survival, SUM(inc) OVER cum AS g, SUM(CASE WHEN inc IS NULL THEN 1 ELSE 0 END) OVER cum AS bad FROM gw WINDOW cum AS (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), g3 AS (SELECT t, d, n_risk, survival, bad, round(survival * sqrt(CAST(g AS DOUBLE)), 6) AS se FROM g2) SELECT t, d AS n_death, n_risk, survival, CASE WHEN bad = 0 THEN se END AS se, CASE WHEN bad = 0 THEN round(greatest(survival - 1.96 * se, 0.0), 6) END AS lo, CASE WHEN bad = 0 THEN round(least(survival + 1.96 * se, 1.0), 6) END AS hi FROM g3 ORDER BY t""",
-    // value-domain-squared difference census, ceiling-rank median
-    "q548_hodges_lehmann" ->
-      """WITH e AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v, o_orderpriority = '1-URGENT' AS isa FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')), ca AS (SELECT v AS va, CAST(COUNT(*) AS BIGINT) AS ta FROM e WHERE isa GROUP BY 1), cb AS (SELECT v AS vb, CAST(COUNT(*) AS BIGINT) AS tb FROM e WHERE NOT isa GROUP BY 1), dd AS (SELECT va - vb AS d, CAST(SUM(ta * tb) AS BIGINT) AS w FROM ca, cb GROUP BY 1), st AS (SELECT d, CAST(SUM(w) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cw, CAST(SUM(w) OVER () AS BIGINT) AS tw FROM dd) SELECT CAST(MAX(tw) AS BIGINT) AS n_pairs, round((CAST(MIN(CASE WHEN cw >= (tw + 1) // 2 THEN d END) AS DOUBLE) + CAST(MIN(CASE WHEN cw >= tw // 2 + 1 THEN d END) AS DOUBLE)) / 2.0, 6) AS hl_shift FROM st""",
-    // 3 unrolled IPF rounds, every rescaled weight re-pinned to the grid
-    "q546_raking" ->
-      """WITH cells AS (SELECT source AS r, lang AS c, COUNT(*) AS n FROM documents GROUP BY 1, 2), rr AS (SELECT CAST(COUNT(DISTINCT source) AS DOUBLE) AS nr FROM documents), base AS (SELECT r, c, n, rr.nr, SUM(n) OVER () AS tot, CAST(SUM(n) OVER (PARTITION BY c) AS DOUBLE) / CAST(SUM(n) OVER () AS DOUBLE) AS ct, CAST(round(CAST(n AS DOUBLE) / CAST(SUM(n) OVER () AS DOUBLE), 9) AS DECIMAL(18,9)) AS w FROM cells, rr), i1r AS (SELECT r, c, n, nr, tot, ct, CAST(round(CAST(w AS DOUBLE) * ((1.0 / nr) / CAST(SUM(w) OVER (PARTITION BY r) AS DOUBLE)), 9) AS DECIMAL(18,9)) AS w FROM base), i1c AS (SELECT r, c, n, nr, tot, ct, CAST(round(CAST(w AS DOUBLE) * (ct / CAST(SUM(w) OVER (PARTITION BY c) AS DOUBLE)), 9) AS DECIMAL(18,9)) AS w FROM i1r), i2r AS (SELECT r, c, n, nr, tot, ct, CAST(round(CAST(w AS DOUBLE) * ((1.0 / nr) / CAST(SUM(w) OVER (PARTITION BY r) AS DOUBLE)), 9) AS DECIMAL(18,9)) AS w FROM i1c), i2c AS (SELECT r, c, n, nr, tot, ct, CAST(round(CAST(w AS DOUBLE) * (ct / CAST(SUM(w) OVER (PARTITION BY c) AS DOUBLE)), 9) AS DECIMAL(18,9)) AS w FROM i2r), i3r AS (SELECT r, c, n, nr, tot, ct, CAST(round(CAST(w AS DOUBLE) * ((1.0 / nr) / CAST(SUM(w) OVER (PARTITION BY r) AS DOUBLE)), 9) AS DECIMAL(18,9)) AS w FROM i2c), i3c AS (SELECT r, c, n, nr, tot, ct, CAST(round(CAST(w AS DOUBLE) * (ct / CAST(SUM(w) OVER (PARTITION BY c) AS DOUBLE)), 9) AS DECIMAL(18,9)) AS w FROM i3r) SELECT r, c, CAST(n AS BIGINT) AS n, CAST(w AS DOUBLE) AS weight, round(CAST(w AS DOUBLE) / (CAST(n AS DOUBLE) / CAST(tot AS DOUBLE)), 6) AS factor FROM i3c ORDER BY r, c""",
-    // q536's pair graph + brand labels: within-mass vs degree-expectation
-    "q543_modularity" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem), e AS (SELECT DISTINCT a.pk AS id_a, b.pk AS id_b FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk), m AS (SELECT CAST(COUNT(*) AS DOUBLE) AS m, CAST(COUNT(*) AS BIGINT) AS mi FROM e), deg AS (SELECT n, COUNT(*) AS deg FROM (SELECT id_a AS n FROM e UNION ALL SELECT id_b AS n FROM e) GROUP BY n), lab AS (SELECT p_partkey AS node, p_brand AS community FROM part), ld AS (SELECT deg.n, deg.deg, lab.community FROM deg LEFT JOIN lab ON deg.n = lab.node), ec AS (SELECT la.community, CAST(COUNT(*) AS BIGINT) AS e_in FROM e JOIN lab la ON e.id_a = la.node JOIN lab lb ON e.id_b = lb.node WHERE la.community = lb.community GROUP BY 1), dc AS (SELECT community, CAST(SUM(deg) AS BIGINT) AS d_c FROM ld WHERE community IS NOT NULL GROUP BY 1), pc AS (SELECT dc.community, COALESCE(ec.e_in, 0) AS e_in, dc.d_c, CAST(round(CAST(COALESCE(ec.e_in, 0) AS DOUBLE) / m.m - (CAST(dc.d_c AS DOUBLE) / (2.0 * m.m)) * (CAST(dc.d_c AS DOUBLE) / (2.0 * m.m)), 9) AS DECIMAL(18,9)) AS term FROM dc LEFT JOIN ec ON dc.community = ec.community, m), ul AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_unlabeled FROM ld WHERE community IS NULL) SELECT CAST(COUNT(*) AS BIGINT) AS n_communities, CAST(SUM(e_in) AS BIGINT) AS within_edges, (SELECT mi FROM m) AS n_edges, (SELECT n_unlabeled FROM ul) AS n_unlabeled, round(CAST(SUM(term) AS DOUBLE), 9) AS q FROM pc""",
-    // directional uncertainty coefficients from the q256 ln-term censuses
-    "q544_theils_u" ->
-      """WITH j AS (SELECT o_orderpriority AS x, o_orderstatus AS y, COUNT(*) AS n_xy FROM orders GROUP BY 1, 2), jj AS (SELECT x, y, n_xy, SUM(n_xy) OVER (PARTITION BY x) AS n_x, SUM(n_xy) OVER (PARTITION BY y) AS n_y, SUM(n_xy) OVER () AS n FROM j), mi AS (SELECT CAST(SUM(CAST(round(CAST(n_xy AS DOUBLE) / CAST(n AS DOUBLE) * ln(CAST(n_xy AS DOUBLE) * CAST(n AS DOUBLE) / (CAST(n_x AS DOUBLE) * CAST(n_y AS DOUBLE))), 9) AS DECIMAL(18,9))) AS DOUBLE) AS mi FROM jj), hx AS (SELECT CAST(SUM(CAST(round(-(CAST(c AS DOUBLE) / CAST(n AS DOUBLE) * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))), 9) AS DECIMAL(18,9))) AS DOUBLE) AS h_x FROM (SELECT COUNT(*) AS c, SUM(COUNT(*)) OVER () AS n FROM orders GROUP BY o_orderpriority)), hy AS (SELECT CAST(SUM(CAST(round(-(CAST(c AS DOUBLE) / CAST(n AS DOUBLE) * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE))), 9) AS DECIMAL(18,9))) AS DOUBLE) AS h_y FROM (SELECT COUNT(*) AS c, SUM(COUNT(*)) OVER () AS n FROM orders GROUP BY o_orderstatus)) SELECT round(mi.mi, 9) AS mi, round(hx.h_x, 9) AS h_x, round(hy.h_y, 9) AS h_y, CASE WHEN hx.h_x > 0.0 THEN round(mi.mi / hx.h_x, 6) END AS u_x_given_y, CASE WHEN hy.h_y > 0.0 THEN round(mi.mi / hy.h_y, 6) END AS u_y_given_x FROM mi, hx, hy""",
-    // value census, CDF gap terms normalized by the domain range
-    "q541_wasserstein" ->
-      """WITH e AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v, o_orderpriority = '1-URGENT' AS isa FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')), cen AS (SELECT v, CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS ta, CAST(SUM(CASE WHEN NOT isa THEN 1 ELSE 0 END) AS BIGINT) AS tb FROM e GROUP BY v), st AS (SELECT v, SUM(ta) OVER cw AS ca, SUM(tb) OVER cw AS cb, SUM(ta) OVER () AS na, SUM(tb) OVER () AS nb, MAX(v) OVER () - MIN(v) OVER () AS rng, LEAD(v) OVER (ORDER BY v) - v AS gap FROM cen WINDOW cw AS (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), tm AS (SELECT na, nb, rng, CAST(round(abs(CAST(ca AS DOUBLE) / CAST(na AS DOUBLE) - CAST(cb AS DOUBLE) / CAST(nb AS DOUBLE)) * CAST(gap AS DOUBLE) / CAST(rng AS DOUBLE), 9) AS DECIMAL(28,9)) AS term FROM st WHERE gap IS NOT NULL) SELECT CAST(MAX(na) AS BIGINT) AS n_a, CAST(MAX(nb) AS BIGINT) AS n_b, CAST(MAX(rng) AS BIGINT) AS v_range, round(CAST(SUM(term) AS DOUBLE), 9) AS w1_norm, round(CAST(SUM(term) AS DOUBLE) * CAST(MAX(rng) AS DOUBLE), 6) AS w1 FROM tm""",
-    // the q458 decomposition ratios drive the shrink factor; means are
-    // exact integer/count divisions
-    "q538_james_stein" ->
-      """WITH e AS (SELECT n.n_name AS g, CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS v FROM customer JOIN nation n ON c_nationkey = n_nationkey), pg AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n_g, SUM(CAST(v AS DECIMAL(38,0))) AS s_g, SUM(CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))) AS ss_g FROM e GROUP BY g), pt AS (SELECT *, CAST(round(CAST(s_g AS DOUBLE) * CAST(s_g AS DOUBLE) / CAST(n_g AS DOUBLE), 6) AS DECIMAL(38,6)) AS term FROM pg), m AS (SELECT CAST(SUM(n_g) AS BIGINT) AS nn, CAST(COUNT(*) AS BIGINT) AS k, SUM(s_g) AS s, SUM(ss_g) AS ss, SUM(term) AS tsum, SUM(CAST(n_g AS DECIMAL(38,0)) * n_g) AS sn2 FROM pt), f AS (SELECT nn, s, CAST(nn AS DOUBLE) AS n, CAST(k AS DOUBLE) AS kd, CAST(tsum AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(nn AS DOUBLE) AS ssb, CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(nn AS DOUBLE) AS sst, CAST(sn2 AS DOUBLE) AS sn2d FROM m), f2 AS (SELECT nn, s, CASE WHEN (sst - ssb) / (n - kd) <> 0.0 THEN (ssb / (kd - 1.0)) / ((sst - ssb) / (n - kd)) END AS ff, round((n - sn2d / n) / (kd - 1.0), 9) AS n0 FROM f), jg AS (SELECT pg.g, pg.n_g, CAST(pg.s_g AS DOUBLE) / CAST(pg.n_g AS DOUBLE) AS xg, CAST(f2.s AS DOUBLE) / CAST(f2.nn AS DOUBLE) AS xbar, CASE WHEN f2.ff IS NOT NULL THEN CAST(pg.n_g AS DOUBLE) * greatest(f2.ff - 1.0, 0.0) / (f2.n0 + CAST(pg.n_g AS DOUBLE) * greatest(f2.ff - 1.0, 0.0)) END AS lam FROM pg, f2) SELECT g, n_g AS n, round(xg, 6) AS raw_mean, round(lam, 6) AS lambda, round(xbar + lam * (xg - xbar), 6) AS shrunk_mean FROM jg ORDER BY g""",
-    // grid centroids, 1e-12 product-grid cosines, min-label tie argmax
-    "q539_label_noise" ->
-      """WITH vx AS (SELECT vec_id, CAST(label AS BIGINT) AS lt, unnest(range(64)) AS dim, unnest(list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE), 6) AS DECIMAL(18,6)))) AS xc FROM embeddings), cd AS (SELECT lt AS cl, dim, CAST(SUM(xc) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS m FROM vx GROUP BY 1, 2), nrm AS (SELECT cl, sqrt(CAST(SUM(CAST(round(m * m, 12) AS DECIMAL(30,12))) AS DOUBLE)) AS nc FROM cd GROUP BY 1), dots AS (SELECT v.vec_id, v.lt, c.cl, CAST(SUM(CAST(round(CAST(v.xc AS DOUBLE) * c.m, 12) AS DECIMAL(30,12))) AS DOUBLE) AS dot FROM vx v JOIN cd c ON v.dim = c.dim GROUP BY 1, 2, 3), sc AS (SELECT d.vec_id, d.lt, d.cl, round(d.dot / n.nc, 6) AS score FROM dots d JOIN nrm n ON d.cl = n.cl), win AS (SELECT vec_id, lt, cl, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY score DESC, cl) AS rn FROM sc), cf AS (SELECT lt AS label, cl AS assigned, CAST(COUNT(*) AS BIGINT) AS n FROM win WHERE rn = 1 GROUP BY 1, 2) SELECT label, assigned, n, round(CAST(n AS DOUBLE) / CAST(SUM(n) OVER (PARTITION BY label) AS DOUBLE), 6) AS share FROM cf ORDER BY label, assigned""",
-    // doc-order positions, first-occurrence census, prefix sums, q277 OLS
-    "q535_heaps_law" ->
-      s"""$HASH_MACROS; WITH d AS (SELECT doc_id, docwords(text) AS ws FROM documents), p AS (SELECT doc_id, CAST(ROW_NUMBER() OVER (ORDER BY doc_id) AS BIGINT) AS pos, CAST(len(ws) AS BIGINT) AS nw FROM d), t AS (SELECT pos, SUM(nw) OVER (ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS toks FROM p), wpos AS (SELECT p.pos AS pos, unnest(d.ws) AS w FROM d JOIN p ON d.doc_id = p.doc_id), fo AS (SELECT w, MIN(pos) AS fp FROM wpos GROUP BY w), np AS (SELECT fp, COUNT(*) AS nn FROM fo GROUP BY fp), v AS (SELECT t.pos, t.toks, SUM(COALESCE(np.nn, 0)) OVER (ORDER BY t.pos ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS vocab FROM t LEFT JOIN np ON t.pos = np.fp), tm AS (SELECT toks, vocab, CAST(round(ln(CAST(toks AS DOUBLE)), 9) AS DECIMAL(18,9)) AS lx, CAST(round(ln(CAST(vocab AS DOUBLE)), 9) AS DECIMAL(18,9)) AS ly, CAST(round(ln(CAST(toks AS DOUBLE)) * ln(CAST(toks AS DOUBLE)), 9) AS DECIMAL(18,9)) AS lxx, CAST(round(ln(CAST(toks AS DOUBLE)) * ln(CAST(vocab AS DOUBLE)), 9) AS DECIMAL(18,9)) AS lxy FROM v WHERE toks > 0 AND vocab > 0), s AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(MAX(toks) AS BIGINT) AS n_tokens, CAST(MAX(vocab) AS BIGINT) AS vocab, CAST(SUM(lx) AS DOUBLE) AS sx, CAST(SUM(ly) AS DOUBLE) AS sy, CAST(SUM(lxx) AS DOUBLE) AS sxx, CAST(SUM(lxy) AS DOUBLE) AS sxy FROM tm) SELECT n_docs, n_tokens, vocab, round((CAST(n_docs AS DOUBLE) * sxy - sx * sy) / (CAST(n_docs AS DOUBLE) * sxx - sx * sx), 6) AS beta, round((sy - (CAST(n_docs AS DOUBLE) * sxy - sx * sy) / (CAST(n_docs AS DOUBLE) * sxx - sx * sx) * sx) / CAST(n_docs AS DOUBLE), 6) AS ln_k FROM s""",
-    // same-order part pairs, degree census, broadcast threshold sweep
-    "q536_rich_club" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem), e AS (SELECT DISTINCT a.pk AS id_a, b.pk AS id_b FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk), deg AS (SELECT n, COUNT(*) AS deg FROM (SELECT id_a AS n FROM e UNION ALL SELECT id_b AS n FROM e) GROUP BY n), ks AS (SELECT CAST(unnest([1, 2, 4, 8]) AS BIGINT) AS k), nk AS (SELECT k, COUNT(*) AS n_club FROM deg, ks WHERE deg > k GROUP BY k), ek AS (SELECT k, COUNT(*) AS e_club FROM e JOIN deg da ON e.id_a = da.n JOIN deg db ON e.id_b = db.n, ks WHERE da.deg > k AND db.deg > k GROUP BY k) SELECT ks.k, CAST(COALESCE(nk.n_club, 0) AS BIGINT) AS n_club, CAST(COALESCE(ek.e_club, 0) AS BIGINT) AS e_club, CASE WHEN COALESCE(nk.n_club, 0) >= 2 THEN round(2.0 * CAST(COALESCE(ek.e_club, 0) AS DOUBLE) / (CAST(nk.n_club AS DOUBLE) * (CAST(nk.n_club AS DOUBLE) - 1.0)), 6) END AS phi FROM ks LEFT JOIN nk ON ks.k = nk.k LEFT JOIN ek ON ks.k = ek.k ORDER BY ks.k""",
-    // the q420 family under the harmonic-shrunk BY critical line
-    "q537_by_fdr" ->
-      """WITH c AS (SELECT n.n_name, CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents FROM customer JOIN nation n ON c_nationkey = n_nationkey), g AS (SELECT n_name, CAST(COUNT(*) AS BIGINT) AS na, SUM(CAST(cents AS DECIMAL(38,0))) AS sa, SUM(CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0))) AS saa FROM c GROUP BY 1), t AS (SELECT CAST(COUNT(*) AS BIGINT) AS nt, SUM(CAST(cents AS DECIMAL(38,0))) AS st, SUM(CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0))) AS stt FROM c), j AS (SELECT n_name, na, CAST(sa AS DOUBLE) AS saD, CAST(saa AS DOUBLE) AS saaD, nt - na AS nb, CAST(st - sa AS DOUBLE) AS sbD, CAST(stt - saa AS DOUBLE) AS sbbD FROM g, t), zc AS (SELECT n_name, (saD / CAST(na AS DOUBLE) - sbD / CAST(nb AS DOUBLE)) / sqrt(((CAST(na AS DOUBLE) * saaD - saD * saD) / (CAST(na AS DOUBLE) * (CAST(na AS DOUBLE) - 1.0))) / CAST(na AS DOUBLE) + ((CAST(nb AS DOUBLE) * sbbD - sbD * sbD) / (CAST(nb AS DOUBLE) * (CAST(nb AS DOUBLE) - 1.0))) / CAST(nb AS DOUBLE)) AS z FROM j), pt AS (SELECT n_name, z, 1.0 / (1.0 + 0.2316419 * abs(z)) AS tt FROM zc), pp AS (SELECT n_name, round(z, 6) AS zr, round(2.0 * 0.3989422804014327 * exp(-(abs(z) * abs(z)) / 2.0) * ((((1.330274429 * tt - 1.821255978) * tt + 1.781477937) * tt - 0.356563782) * tt + 0.319381530) * tt, 9) AS p FROM pt), bh AS (SELECT n_name, zr, p, CAST(ROW_NUMBER() OVER (ORDER BY p, n_name) AS BIGINT) AS r, CAST(COUNT(*) OVER () AS BIGINT) AS m FROM pp), hh AS (SELECT n_name, zr, p, r, m, CAST(SUM(CAST(round(1.0 / CAST(r AS DOUBLE), 9) AS DECIMAL(18,9))) OVER () AS DOUBLE) AS hm FROM bh), km AS (SELECT MAX(CASE WHEN p * CAST(m AS DOUBLE) * hm <= CAST(r AS DOUBLE) * 0.05 THEN r END) AS kmax FROM hh) SELECT n_name AS nation, zr AS z, p, r AS p_rank, round(hm, 9) AS h_m, round(CAST(r AS DOUBLE) * 0.05 / (CAST(m AS DOUBLE) * hm), 9) AS by_crit, (km.kmax IS NOT NULL AND r <= km.kmax) AS rejected FROM hh, km ORDER BY p_rank""",
-    // first-3-events panel, (item, category) census, pooled-share chance
-    "q532_fleiss_kappa" ->
-      """WITH e AS (SELECT user_id, event_type, event_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), r AS (SELECT user_id, event_type, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY sec, event_id) AS rn, COUNT(*) OVER (PARTITION BY user_id) AS cnt FROM e), f AS (SELECT user_id, event_type FROM r WHERE rn <= 3 AND cnt >= 3), cells AS (SELECT user_id AS i, event_type AS j, COUNT(*) AS nij FROM f GROUP BY 1, 2), per AS (SELECT i, SUM(nij) AS ni, SUM(nij * nij) AS sq FROM cells GROUP BY 1), st AS (SELECT COUNT(*) AS N, SUM(sq) AS sumsq FROM per), pj AS (SELECT j, SUM(nij) AS cj FROM cells GROUP BY 1), pe AS (SELECT SUM(CAST(round((CAST(cj AS DOUBLE) / (CAST(N AS DOUBLE) * 3.0)) * (CAST(cj AS DOUBLE) / (CAST(N AS DOUBLE) * 3.0)), 9) AS DECIMAL(28,9))) AS pev FROM pj, st) SELECT CAST(st.N AS BIGINT) AS n_items, CAST(3 AS BIGINT) AS n_raters, round((CAST(st.sumsq AS DOUBLE) - CAST(st.N AS DOUBLE) * 3.0) / (CAST(st.N AS DOUBLE) * 3.0 * 2.0), 9) AS p_bar, round(CAST(pe.pev AS DOUBLE), 9) AS p_e, round(((CAST(st.sumsq AS DOUBLE) - CAST(st.N AS DOUBLE) * 3.0) / (CAST(st.N AS DOUBLE) * 3.0 * 2.0) - CAST(pe.pev AS DOUBLE)) / (1.0 - CAST(pe.pev AS DOUBLE)), 6) AS kappa FROM st, pe""",
-    // the q519 KM census chain re-read as additive hazard
-    "q533_nelson_aalen" ->
-      """WITH e AS (SELECT user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), b AS (SELECT MIN(sec) AS lo, MAX(sec) AS hi FROM e), u AS (SELECT user_id, MIN(sec) AS first, MAX(sec) AS last FROM e GROUP BY 1), lv AS (SELECT CAST((last - first) // 3600 AS BIGINT) AS t, CASE WHEN last > (SELECT lo + 2 * (hi - lo) // 3 FROM b) THEN 0 ELSE 1 END AS death FROM u), bt AS (SELECT t, CAST(SUM(death) AS BIGINT) AS d, COUNT(*) AS n_t FROM lv GROUP BY 1), rk AS (SELECT t, d, CAST(SUM(n_t) OVER (ORDER BY t ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT) AS n_risk FROM bt), na AS (SELECT t, d, n_risk, CAST(round(CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE), 9) AS DECIMAL(28,9)) AS h FROM rk) SELECT t, d AS n_death, n_risk, CAST(h AS DOUBLE) AS h_inc, CAST(SUM(h) OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cum_hazard, round(exp(-CAST(SUM(h) OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)), 6) AS fh_survival FROM na ORDER BY t""",
-    // the q520 arm census with at-risk-share weights (scale-invariant
-    // form of the classic n_risk weighting)
-    "q534_gehan_wilcoxon" ->
-      """WITH e AS (SELECT user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), b AS (SELECT MIN(sec) AS lo, MAX(sec) AS hi FROM e), u AS (SELECT user_id, MIN(sec) AS first, MAX(sec) AS last, CAST(concat('0x', substr(md5(concat('lr1:', CAST(user_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 = 0 AS isa FROM e GROUP BY user_id), lv AS (SELECT CAST((last - first) // 3600 AS BIGINT) AS t, CASE WHEN last > (SELECT lo + 2 * (hi - lo) // 3 FROM b) THEN 0 ELSE 1 END AS death, isa FROM u), bt AS (SELECT t, CAST(SUM(CASE WHEN isa THEN death ELSE 0 END) AS BIGINT) AS da, CAST(SUM(death) AS BIGINT) AS d, CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS nta, COUNT(*) AS nt FROM lv GROUP BY 1), rk AS (SELECT t, da, d, nta, CAST(SUM(nta) OVER lat AS BIGINT) AS ra, CAST(SUM(nt) OVER lat AS BIGINT) AS r FROM bt WINDOW lat AS (ORDER BY t ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)), us AS (SELECT CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS n_a, CAST(SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS BIGINT) AS n_b FROM u), tm AS (SELECT CAST(round(CAST(r AS DOUBLE) / (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) * (CAST(da AS DOUBLE) - CAST(ra AS DOUBLE) / CAST(r AS DOUBLE) * CAST(d AS DOUBLE)), 9) AS DECIMAL(28,9)) AS u_t, CAST(CASE WHEN r > 1 THEN round(CAST(r AS DOUBLE) / (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE)) * (CAST(r AS DOUBLE) / (CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE))) * CAST(d AS DOUBLE) * (CAST(ra AS DOUBLE) / CAST(r AS DOUBLE)) * (1.0 - CAST(ra AS DOUBLE) / CAST(r AS DOUBLE)) * (CAST(r AS DOUBLE) - CAST(d AS DOUBLE)) / (CAST(r AS DOUBLE) - 1.0), 9) ELSE 0.0 END AS DECIMAL(28,9)) AS v_t FROM rk, us), ag AS (SELECT SUM(u_t) AS uu, SUM(v_t) AS v FROM tm) SELECT us.n_a, us.n_b, CASE WHEN CAST(ag.v AS DOUBLE) > 0.0 THEN round(CAST(ag.uu AS DOUBLE) / sqrt(CAST(ag.v AS DOUBLE)), 6) END AS z, CASE WHEN CAST(ag.v AS DOUBLE) > 0.0 THEN round(CAST(ag.uu AS DOUBLE) * CAST(ag.uu AS DOUBLE) / CAST(ag.v AS DOUBLE), 6) END AS chi2 FROM ag, us""",
-    // the merged state the two delta commits must produce: +11 cents on
-    // every third key, shadow inserts for every seventh
-    "q529_merge_on_read" ->
-      """WITH c AS (SELECT c_custkey, c_mktsegment, CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents FROM customer), merged AS (SELECT c_mktsegment, CASE WHEN c_custkey % 3 = 0 THEN cents + 11 ELSE cents END AS cents FROM c UNION ALL SELECT c_mktsegment, cents - 5 AS cents FROM c WHERE c_custkey % 7 = 0) SELECT c_mktsegment, COUNT(*) AS n, CAST(SUM(cents) AS BIGINT) AS total_cents FROM merged GROUP BY 1 ORDER BY 1""",
-    // the engine's xorshift shingle fold + census + gaps-and-islands
-    // extension, replayed verbatim: every maximal run of positions whose
-    // 8-shingle occurs >= 2x corpus-wide
-    "q527_repeated_spans" ->
-      s"""$HASH_MACROS; WITH hs AS ($DOC_HASHES), ps AS (SELECT doc_id, unnest(range(greatest(n - 7, 0))) AS pos, h FROM hs), sh AS (SELECT doc_id, pos, list_reduce(h[CAST(pos + 1 AS INTEGER):CAST(pos + 8 AS INTEGER)], (a, b) -> shmix(a, b)) AS s FROM ps), rep AS (SELECT s FROM sh GROUP BY s HAVING COUNT(*) >= 2), mk AS (SELECT doc_id, pos FROM sh WHERE s IN (SELECT s FROM rep)), il AS (SELECT doc_id, pos, pos - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY pos) AS grp FROM mk) SELECT doc_id, MIN(pos) AS start_tok, MAX(pos) + 7 AS end_tok, MAX(pos) + 8 - MIN(pos) AS span_tokens FROM il GROUP BY doc_id, grp ORDER BY doc_id, start_tok""",
-    // one conditional moment pass, pooled-SD standardization, Hedges fix
-    "q525_cohens_d" ->
-      """WITH e AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v, o_orderpriority = '1-URGENT' AS isa FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')), g AS (SELECT CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS n_a, CAST(SUM(CASE WHEN NOT isa THEN 1 ELSE 0 END) AS BIGINT) AS n_b, SUM(CASE WHEN isa THEN CAST(v AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS sa, SUM(CASE WHEN NOT isa THEN CAST(v AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS sb, SUM(CASE WHEN isa THEN CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS saa, SUM(CASE WHEN NOT isa THEN CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0)) ELSE CAST(0 AS DECIMAL(38,0)) END) AS sbb FROM e), h AS (SELECT n_a, n_b, CAST(n_a AS DOUBLE) AS na, CAST(n_b AS DOUBLE) AS nb, CAST(sa AS DOUBLE) AS saD, CAST(sb AS DOUBLE) AS sbD, CAST(saa AS DOUBLE) AS saaD, CAST(sbb AS DOUBLE) AS sbbD FROM g), i AS (SELECT n_a, n_b, (saD / na - sbD / nb) / sqrt(((saaD - saD * saD / na) + (sbbD - sbD * sbD / nb)) / (na + nb - 2.0)) AS d, 1.0 - 3.0 / (4.0 * (na + nb) - 9.0) AS gc, n_a > 1 AND n_b > 1 AS ok FROM h) SELECT n_a, n_b, CASE WHEN ok THEN round(d, 6) END AS cohens_d, CASE WHEN ok THEN round(d * gc, 6) END AS hedges_g FROM i""",
-    // the q319 census machinery over order cents + two pinned ratios
-    "q518_mw_effect_sizes" ->
-      """WITH e AS (SELECT CAST(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS DOUBLE) AS v, o_orderpriority = '1-URGENT' AS isa FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')), bv AS (SELECT v, SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS ta, SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS tb FROM e GROUP BY v), rk AS (SELECT ta, tb, ta + tb AS t, SUM(ta + tb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c FROM bv), ag AS (SELECT CAST(SUM(ta) AS BIGINT) AS na, CAST(SUM(tb) AS BIGINT) AS nb, SUM(CAST(ta AS DECIMAL(38,0)) * CAST(2 * c - t + 1 AS DECIMAL(38,0))) AS ra2, SUM(CAST(t AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0)) - CAST(t AS DECIMAL(38,0))) AS ties FROM rk), f AS (SELECT na, nb, CAST(ra2 - CAST(na AS DECIMAL(38,0)) * CAST(na + 1 AS DECIMAL(38,0)) AS DOUBLE) AS u2d, ties FROM ag) SELECT na AS n_a, nb AS n_b, u2d / 2.0 AS u_a, round((u2d - CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) / (2.0 * sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) / 12.0 * ((CAST(na + nb AS DOUBLE) + 1.0) - CAST(ties AS DOUBLE) / (CAST(na + nb AS DOUBLE) * (CAST(na + nb AS DOUBLE) - 1.0))))), 6) AS z, round(u2d / 2.0 / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)), 6) AS cles, round(2.0 * (u2d / 2.0) / (CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) - 1.0, 6) AS rank_biserial FROM f""",
-    // the q321 KM chain + the step integral to tau=200, grid terms
-    "q519_rmst" ->
-      """WITH e AS (SELECT user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), b AS (SELECT MIN(sec) AS lo, MAX(sec) AS hi FROM e), u AS (SELECT user_id, MIN(sec) AS first, MAX(sec) AS last FROM e GROUP BY 1), lv AS (SELECT CAST((last - first) // 3600 AS BIGINT) AS t, CASE WHEN last > (SELECT lo + 2 * (hi - lo) // 3 FROM b) THEN 0 ELSE 1 END AS death FROM u), bt AS (SELECT t, CAST(SUM(death) AS BIGINT) AS d, COUNT(*) AS n_t FROM lv GROUP BY 1), rk AS (SELECT t, d, CAST(SUM(n_t) OVER (ORDER BY t ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT) AS n_risk FROM bt), f AS (SELECT t, 1.0 - CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE) AS factor FROM rk), idx AS (SELECT t, ROW_NUMBER() OVER (ORDER BY t) AS i FROM f), arr AS (SELECT list(factor ORDER BY t) AS fs FROM f), km AS (SELECT t, round(list_reduce(list_prepend(CAST(1 AS DOUBLE), fs[1:CAST(i AS INTEGER)]), (a, x) -> a * x), 6) AS survival FROM idx, arr), lg AS (SELECT t, survival, COALESCE(LAG(t) OVER (ORDER BY t), 0) AS prev_t, COALESCE(LAG(survival) OVER (ORDER BY t), 1.0) AS prev_s FROM km), seg AS (SELECT CAST(round(prev_s * CAST(LEAST(t, 200) - prev_t AS DOUBLE), 6) AS DECIMAL(18,6)) AS term FROM lg WHERE prev_t < 200), tl AS (SELECT MAX(t) AS last_t, arg_max(survival, t) AS last_s FROM km), bd AS (SELECT CAST(SUM(term) AS DOUBLE) AS body, COUNT(*) AS n_steps FROM seg), rm AS (SELECT round(bd.body + CASE WHEN tl.last_t < 200 THEN round(tl.last_s * CAST(200 - tl.last_t AS DOUBLE), 6) ELSE 0.0 END, 6) AS rmst, bd.n_steps FROM bd, tl) SELECT CAST(200 AS BIGINT) AS tau, CAST(n_steps AS BIGINT) AS n_steps, rmst, round(rmst / 200.0, 6) AS mean_survival FROM rm""",
-    // hypergeometric O-E/V terms per duration bucket, grid-decimal sums
-    "q520_logrank" ->
-      """WITH e AS (SELECT user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), b AS (SELECT MIN(sec) AS lo, MAX(sec) AS hi FROM e), u AS (SELECT user_id, MIN(sec) AS first, MAX(sec) AS last, CAST(concat('0x', substr(md5(concat('lr1:', CAST(user_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 = 0 AS isa FROM e GROUP BY user_id), lv AS (SELECT CAST((last - first) // 3600 AS BIGINT) AS t, CASE WHEN last > (SELECT lo + 2 * (hi - lo) // 3 FROM b) THEN 0 ELSE 1 END AS death, isa FROM u), bt AS (SELECT t, CAST(SUM(CASE WHEN isa THEN death ELSE 0 END) AS BIGINT) AS da, CAST(SUM(death) AS BIGINT) AS d, CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS nta, COUNT(*) AS nt FROM lv GROUP BY 1), rk AS (SELECT t, da, d, nta, CAST(SUM(nta) OVER lat AS BIGINT) AS ra, CAST(SUM(nt) OVER lat AS BIGINT) AS r FROM bt WINDOW lat AS (ORDER BY t ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)), tm AS (SELECT da, CAST(round(CAST(ra AS DOUBLE) / CAST(r AS DOUBLE) * CAST(d AS DOUBLE), 9) AS DECIMAL(28,9)) AS e_t, CAST(CASE WHEN r > 1 THEN round(CAST(d AS DOUBLE) * (CAST(ra AS DOUBLE) / CAST(r AS DOUBLE)) * (1.0 - CAST(ra AS DOUBLE) / CAST(r AS DOUBLE)) * (CAST(r AS DOUBLE) - CAST(d AS DOUBLE)) / (CAST(r AS DOUBLE) - 1.0), 9) ELSE 0.0 END AS DECIMAL(28,9)) AS v_t FROM rk), ag AS (SELECT CAST(SUM(da) AS BIGINT) AS o_a, SUM(e_t) AS e_a, SUM(v_t) AS v FROM tm), us AS (SELECT CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS n_a, CAST(SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS BIGINT) AS n_b FROM u) SELECT us.n_a, us.n_b, ag.o_a, round(CAST(ag.e_a AS DOUBLE), 6) AS e_a, CASE WHEN CAST(ag.v AS DOUBLE) > 0.0 THEN round((CAST(ag.o_a AS DOUBLE) - CAST(ag.e_a AS DOUBLE)) * (CAST(ag.o_a AS DOUBLE) - CAST(ag.e_a AS DOUBLE)) / CAST(ag.v AS DOUBLE), 6) END AS chi2 FROM ag, us""",
-    // the q488 micro-share plan + the q48 md5 rank draw, checksummed
-    "q516_neyman_draw" ->
-      """WITH b AS (SELECT CAST(o_orderpriority AS VARCHAR) AS stratum, o_orderkey, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS c FROM orders), per AS (SELECT stratum, COUNT(*) AS n_rows, SUM(CAST(c AS DECIMAL(38,0))) AS sv, SUM(CAST(c AS DECIMAL(38,0)) * CAST(c AS DECIMAL(38,0))) AS svv FROM b GROUP BY 1), sd0 AS (SELECT stratum, n_rows, CASE WHEN n_rows > 1 THEN round(sqrt((CAST(svv AS DOUBLE) - CAST(sv AS DOUBLE) * CAST(sv AS DOUBLE) / CAST(n_rows AS DOUBLE)) / (CAST(n_rows AS DOUBLE) - 1.0)), 6) ELSE 0.0 END AS sd FROM per), w0 AS (SELECT stratum, n_rows, sd, CAST(round(CAST(n_rows AS DOUBLE) * sd, 6) AS DECIMAL(28,6)) AS w FROM sd0), sh AS (SELECT stratum, n_rows, CASE WHEN SUM(w) OVER () > 0 THEN CAST(w AS DOUBLE) / CAST(SUM(w) OVER () AS DOUBLE) ELSE CAST(n_rows AS DOUBLE) / CAST(SUM(n_rows) OVER () AS DOUBLE) END AS share FROM w0), su0 AS (SELECT stratum, CAST(round(share * 1.0e12, 0) AS BIGINT) AS su FROM sh), st AS (SELECT stratum, su, SUM(su) OVER () AS s_total FROM su0), ba AS (SELECT stratum, su, (500 * su) // s_total AS base, (500 * su) % s_total AS rem FROM st), lf AS (SELECT stratum, base, 500 - SUM(base) OVER () AS leftover, ROW_NUMBER() OVER (ORDER BY rem DESC, stratum) AS erk FROM ba), plan AS (SELECT stratum, CAST(base + CASE WHEN erk <= leftover THEN 1 ELSE 0 END AS BIGINT) AS alloc FROM lf), rk AS (SELECT stratum, o_orderkey, ROW_NUMBER() OVER (PARTITION BY stratum ORDER BY md5(CAST(o_orderkey AS VARCHAR)), o_orderkey) AS rn FROM b), dr AS (SELECT rk.stratum, rk.o_orderkey FROM rk JOIN plan ON rk.stratum = plan.stratum AND rk.rn <= plan.alloc) SELECT dr.stratum, MAX(plan.alloc) AS alloc, COUNT(*) AS n_drawn, CAST(SUM(dr.o_orderkey) AS BIGINT) AS drawn_key_sum FROM dr JOIN plan ON dr.stratum = plan.stratum GROUP BY 1 ORDER BY 1""",
-    // metadata-only: 2 injected crashed-writer files; orphan mass and
-    // the untouched snapshot replay as plain counts
-    "q481_orphan_gc" ->
-      """SELECT CAST(2 AS BIGINT) AS n_orphans, (SELECT COUNT(*) FROM orders WHERE o_orderkey % 97 = 0) + (SELECT COUNT(*) FROM orders WHERE o_orderkey % 89 = 0) AS orphan_rows, CAST(2 AS BIGINT) AS n_removed, CAST(0 AS BIGINT) AS n_after, (SELECT COUNT(*) FROM orders) AS snapshot_rows""",
-    // q470's census numerator, tail weight 1/(c·(N−c)), last block out
-    "q478_anderson_darling" ->
-      """WITH e AS (SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v, event_type = 'view' AS isa FROM events WHERE event_type IN ('view', 'click')), cen AS (SELECT v, CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS ta, CAST(SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS BIGINT) AS tb FROM e GROUP BY v), rk AS (SELECT *, CAST(SUM(ta) OVER w AS BIGINT) AS ca, CAST(SUM(tb) OVER w AS BIGINT) AS cb, CAST(SUM(ta) OVER () AS BIGINT) AS na, CAST(SUM(tb) OVER () AS BIGINT) AS nb FROM cen WINDOW w AS (ORDER BY v ROWS UNBOUNDED PRECEDING)), dd AS (SELECT *, ca + cb AS c, na + nb AS nn, CAST(ca AS DECIMAL(38,0)) * nb - CAST(cb AS DECIMAL(38,0)) * na AS d FROM rk), tm AS (SELECT na, nb, CAST(round(CAST(ta + tb AS DOUBLE) * CAST(d * d AS DOUBLE) / (CAST(c AS DOUBLE) * CAST(nn - c AS DOUBLE)), 9) AS DECIMAL(28,9)) AS term FROM dd WHERE c < nn), ag AS (SELECT MAX(na) AS n_a, MAX(nb) AS n_b, SUM(term) AS u FROM tm) SELECT n_a, n_b, round(CASE WHEN n_a > 0 AND n_b > 0 THEN CAST(u AS DOUBLE) / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)) END, 6) AS ad_a2 FROM ag""",
-    // exact Q1/Q3 order stats; 1.5·IQR fences exact in double
-    "q473_tukey_fences" ->
-      """WITH e AS (SELECT o_orderpriority AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM orders), cen AS (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS t FROM e GROUP BY 1, 2), rk AS (SELECT g, v, t, CAST(SUM(t) OVER (PARTITION BY g ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c, CAST(SUM(t) OVER (PARTITION BY g) AS BIGINT) AS n FROM cen), q1 AS (SELECT g, MIN(v) AS q1 FROM rk WHERE c * 4 >= n * 1 GROUP BY g), q3 AS (SELECT g, MIN(v) AS q3 FROM rk WHERE c * 4 >= n * 3 GROUP BY g), f AS (SELECT q1.g, q1.q1, q3.q3, q3.q3 - q1.q1 AS iqr, CAST(q1.q1 AS DOUBLE) - 1.5 * CAST(q3.q3 - q1.q1 AS DOUBLE) AS lo, CAST(q3.q3 AS DOUBLE) + 1.5 * CAST(q3.q3 - q1.q1 AS DOUBLE) AS hi FROM q1 JOIN q3 USING (g)) SELECT cen.g, CAST(SUM(t) AS BIGINT) AS n, MAX(f.q1) AS q1, MAX(f.q3) AS q3, MAX(f.iqr) AS iqr, MAX(f.lo) AS fence_lo, MAX(f.hi) AS fence_hi, CAST(SUM(CASE WHEN CAST(v AS DOUBLE) < f.lo THEN t ELSE 0 END) AS BIGINT) AS n_low, CAST(SUM(CASE WHEN CAST(v AS DOUBLE) > f.hi THEN t ELSE 0 END) AS BIGINT) AS n_high FROM cen JOIN f USING (g) GROUP BY cen.g ORDER BY g""",
-    // doubled tie ranks make the λ₂ numerator a pure integer
-    "q469_l_moments" ->
-      """WITH e AS (SELECT o_orderpriority AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM orders), cen AS (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS t FROM e GROUP BY 1, 2), rk AS (SELECT g, v, t, CAST(SUM(t) OVER (PARTITION BY g ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c, CAST(SUM(t) OVER (PARTITION BY g) AS BIGINT) AS n FROM cen), r2 AS (SELECT *, 2 * c - t + 1 AS r2 FROM rk), ag AS (SELECT g, MAX(n) AS n, SUM(CAST(v AS DECIMAL(38,0)) * t) AS s, SUM(CAST(v AS DECIMAL(38,0)) * (CAST(t AS DECIMAL(38,0)) * r2 - CAST(t AS DECIMAL(38,0)) * (n + 1))) AS n2 FROM r2 GROUP BY g HAVING MAX(n) >= 2), f AS (SELECT g, n, CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS l1, CAST(n2 AS DOUBLE) / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) AS l2 FROM ag) SELECT g, n, round(l1, 6) AS l1, round(l2, 6) AS l2, round(CASE WHEN l1 <> 0.0 THEN l2 / l1 END, 6) AS l_cv FROM f ORDER BY g""",
-    // cross-multiplied CDF differences over the pooled census
-    "q470_cramer_von_mises" ->
-      """WITH e AS (SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v, event_type = 'view' AS isa FROM events WHERE event_type IN ('view', 'click')), cen AS (SELECT v, CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS ta, CAST(SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS BIGINT) AS tb FROM e GROUP BY v), rk AS (SELECT *, CAST(SUM(ta) OVER w AS BIGINT) AS ca, CAST(SUM(tb) OVER w AS BIGINT) AS cb, CAST(SUM(ta) OVER () AS BIGINT) AS na, CAST(SUM(tb) OVER () AS BIGINT) AS nb FROM cen WINDOW w AS (ORDER BY v ROWS UNBOUNDED PRECEDING)), dd AS (SELECT *, CAST(ca AS DECIMAL(38,0)) * nb - CAST(cb AS DECIMAL(38,0)) * na AS d FROM rk), ag AS (SELECT MAX(na) AS n_a, MAX(nb) AS n_b, SUM(CAST(ta + tb AS DECIMAL(38,0)) * d * d) AS u FROM dd) SELECT n_a, n_b, round(CASE WHEN n_a > 0 AND n_b > 0 THEN CAST(u AS DOUBLE) / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE) * CAST(n_a + n_b AS DOUBLE) * CAST(n_a + n_b AS DOUBLE)) END, 6) AS cvm_t FROM ag""",
-    // full-census margins; ln over exact integer cross-products
-    "q466_pmi_collocations" ->
-      """WITH wl AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS ws FROM documents), tk AS (SELECT doc_id, unnest(ws) AS w1, generate_subscripts(ws, 1) AS pos FROM wl), bg AS (SELECT w1, LEAD(w1) OVER (PARTITION BY doc_id ORDER BY pos) AS w2 FROM tk), bg2 AS (SELECT w1, w2 FROM bg WHERE w2 IS NOT NULL AND w1 <> '' AND w2 <> ''), pc AS (SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c_xy FROM bg2 GROUP BY 1, 2), lc AS (SELECT w1, CAST(SUM(c_xy) AS BIGINT) AS c_x FROM pc GROUP BY 1), rc AS (SELECT w2, CAST(SUM(c_xy) AS BIGINT) AS c_y FROM pc GROUP BY 1), na AS (SELECT CAST(SUM(c_xy) AS BIGINT) AS n_all FROM pc), sc AS (SELECT pc.w1, pc.w2, pc.c_xy, round(ln(CAST(CAST(na.n_all AS DECIMAL(38,0)) * pc.c_xy AS DOUBLE) / CAST(CAST(lc.c_x AS DECIMAL(38,0)) * rc.c_y AS DOUBLE)), 6) AS pmi FROM pc JOIN lc USING (w1) JOIN rc USING (w2), na WHERE pc.c_xy >= 3), rk AS (SELECT *, ROW_NUMBER() OVER (ORDER BY pmi DESC, w1, w2) AS rnk FROM sc) SELECT CAST(rnk AS BIGINT) AS rank, w1, w2, c_xy, pmi FROM rk WHERE rnk <= 30 ORDER BY rank""",
-    // two cosine rankings (full + first-16 slice), per-query max-rank
-    // census, the q461 pinned weights
-    "q467_truncation_fidelity" ->
-      s"""$VEC_MACROS; CREATE OR REPLACE MACRO pdot16(v, w) AS list_reduce(list_transform(range(1, 17), i -> CAST(v[i] AS DOUBLE) * w[i]), (a, b) -> a + b); CREATE OR REPLACE MACRO pcos16(a, b) AS pdot16(a, b) / (sqrt(pdot16(a, a)) * sqrt(pdot16(b, b))); WITH qv AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings WHERE vec_id < 8), fsc AS (SELECT qv.qid, e.vec_id AS nid, round(pcos(qv.qe, e.embedding), 4) AS s FROM qv CROSS JOIN embeddings e WHERE e.vec_id <> qv.qid), fr AS (SELECT qid, nid, rnk AS ra FROM (SELECT qid, nid, CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY s DESC NULLS LAST, nid) AS BIGINT) AS rnk FROM fsc) q WHERE rnk <= 10), tsc AS (SELECT qv.qid, e.vec_id AS nid, round(pcos16(qv.qe, e.embedding), 4) AS s FROM qv CROSS JOIN embeddings e WHERE e.vec_id <> qv.qid), tr AS (SELECT qid, nid, rnk AS rb FROM (SELECT qid, nid, CAST(ROW_NUMBER() OVER (PARTITION BY qid ORDER BY s DESC NULLS LAST, nid) AS BIGINT) AS rnk FROM tsc) q WHERE rnk <= 10), j AS (SELECT COALESCE(fr.qid, tr.qid) AS qid, GREATEST(COALESCE(ra, 11), COALESCE(rb, 11)) AS m FROM fr FULL OUTER JOIN tr ON fr.qid = tr.qid AND fr.nid = tr.nid), jf AS (SELECT qid, m FROM j WHERE m <= 10), sp AS (SELECT qv.qid, CAST(u.u AS BIGINT) AS d FROM qv, (SELECT unnest(range(1, 11)) AS u) u), xd AS (SELECT sp.qid, sp.d, CAST(COUNT(jf.m) AS BIGINT) AS x FROM sp LEFT JOIN jf ON jf.qid = sp.qid AND jf.m <= sp.d GROUP BY 1, 2), tm AS (SELECT qid, d, x, CAST(round([0.1, 0.09, 0.081, 0.0729, 0.06561, 0.059049, 0.0531441, 0.04782969, 0.043046721, 0.0387420489][CAST(d AS INTEGER)] * CAST(x AS DOUBLE) / CAST(d AS DOUBLE), 9) AS DECIMAL(18,9)) AS term FROM xd) SELECT qid, MAX(CASE WHEN d = 10 THEN x END) AS overlap_at_k, round(CAST(SUM(term) AS DOUBLE), 6) AS rbo FROM tm GROUP BY qid ORDER BY qid""",
-    // q281's journey derivation; exact end counts, 1e-9 rational credits
-    "q468_position_credits" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000000000 AS sec, event_id FROM events), o AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY sec, event_id) AS rn FROM e), fp AS (SELECT user_id, MIN(rn) AS prn FROM o WHERE event_type = 'purchase' GROUP BY 1), t AS (SELECT o.user_id AS j, o.rn AS ord, o.event_type AS ch FROM o JOIN fp ON o.user_id = fp.user_id WHERE o.rn < fp.prn), b AS (SELECT j, ch, CAST(ROW_NUMBER() OVER (PARTITION BY j ORDER BY ord) AS BIGINT) AS i, CAST(COUNT(*) OVER (PARTITION BY j) AS BIGINT) AS n FROM t), c AS (SELECT ch, CAST(COUNT(*) AS BIGINT) AS n_touches, CAST(SUM(CASE WHEN i = 1 THEN 1 ELSE 0 END) AS BIGINT) AS first_touch, CAST(SUM(CASE WHEN i = n THEN 1 ELSE 0 END) AS BIGINT) AS last_touch, SUM(CAST(round(1.0 / CAST(n AS DOUBLE), 9) AS DECIMAL(18,9))) AS lin, SUM(CAST(round(CASE WHEN n = 1 THEN 1.0 WHEN n = 2 THEN 0.5 WHEN i = 1 OR i = n THEN 0.4 ELSE 0.2 / CAST(n - 2 AS DOUBLE) END, 9) AS DECIMAL(18,9))) AS ush FROM b GROUP BY ch) SELECT ch, n_touches, first_touch, last_touch, round(CAST(lin AS DOUBLE), 6) AS linear, round(CAST(ush AS DOUBLE), 6) AS u_shaped FROM c ORDER BY ch""",
-    // demand events only; the fold replays as a per-key recursive CTE
-    // with explicit anchor casts (the §6 DECIMAL-anchor trap)
-    "q463_croston" ->
-      """WITH RECURSIVE d AS (SELECT l_partkey AS k, date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)) // 7 AS b, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS x FROM lineitem GROUP BY 1, 2), e AS (SELECT k, b, x, ROW_NUMBER() OVER (PARTITION BY k ORDER BY b) AS rn, CAST(COUNT(*) OVER (PARTITION BY k) AS BIGINT) AS n FROM d WHERE x > 0), r AS (SELECT k, rn, CAST(x AS DOUBLE) AS z, CAST(-1 AS DOUBLE) AS p, CAST(b AS DOUBLE) AS lb, n FROM e WHERE rn = 1 AND n >= 2 UNION ALL SELECT e.k, e.rn, 0.5 * CAST(e.x AS DOUBLE) + 0.5 * r.z, CASE WHEN r.p < 0 THEN CAST(e.b AS DOUBLE) - r.lb ELSE 0.5 * (CAST(e.b AS DOUBLE) - r.lb) + 0.5 * r.p END, CAST(e.b AS DOUBLE), r.n FROM r JOIN e ON e.k = r.k AND e.rn = r.rn + 1) SELECT k AS l_partkey, n AS n_demands, round(z, 6) AS size_hat, round(p, 6) AS interval_hat, round(z / p, 6) AS rate_forecast FROM r WHERE rn = n ORDER BY k""",
-    // census moments -> (ADI, CV²) -> pinned 1.32/0.49 routing
-    "q464_sbc_classify" ->
-      """WITH d AS (SELECT l_partkey AS k, date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)) // 7 AS b, CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS x FROM lineitem GROUP BY 1, 2), e AS (SELECT k, b, x FROM d WHERE x > 0), m AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n, MIN(b) AS b0, MAX(b) AS b1, SUM(CAST(x AS DECIMAL(38,0))) AS s, SUM(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))) AS ss FROM e GROUP BY k HAVING COUNT(*) >= 2 AND SUM(CAST(x AS DECIMAL(38,0))) > 0), f AS (SELECT k, n, CAST(b1 - b0 AS DOUBLE) / (CAST(n AS DOUBLE) - 1.0) AS adi, CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS mean, (CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)) / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) AS variance FROM m), f2 AS (SELECT k, n, adi, variance / (mean * mean) AS cv2 FROM f) SELECT k AS l_partkey, n AS n_demands, round(adi, 6) AS adi, round(cv2, 6) AS cv2, CASE WHEN adi < 1.32 AND cv2 < 0.49 THEN 'smooth' WHEN adi >= 1.32 AND cv2 < 0.49 THEN 'intermittent' WHEN adi < 1.32 THEN 'erratic' ELSE 'lumpy' END AS class FROM f2 ORDER BY k""",
-    // train-half order-stat forecast; 0.9·int terms; (0.9 - 1.0) as the
-    // SAME two literals both engines (a -0.1 literal parses differently)
-    "q465_pinball" ->
-      """WITH h AS (SELECT event_type, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS v FROM events GROUP BY 1, 2), tr AS (SELECT event_type, v FROM h WHERE hid % 2 = 0), te AS (SELECT event_type, v FROM h WHERE hid % 2 = 1), cen AS (SELECT event_type, v, CAST(COUNT(*) AS BIGINT) AS t FROM tr GROUP BY 1, 2), rk AS (SELECT event_type, v, CAST(SUM(t) OVER (PARTITION BY event_type ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c, CAST(SUM(t) OVER (PARTITION BY event_type) AS BIGINT) AS n FROM cen), f AS (SELECT event_type, MIN(v) AS f FROM rk WHERE c * 10000 >= n * 9000 GROUP BY 1), tm AS (SELECT te.event_type, te.v - f.f AS d FROM te JOIN f USING (event_type)), t2 AS (SELECT event_type, CAST(round(GREATEST(0.9 * CAST(d AS DOUBLE), (0.9 - 1.0) * CAST(d AS DOUBLE)), 9) AS DECIMAL(28,9)) AS term FROM tm) SELECT t2.event_type, MAX(f.f) AS forecast, CAST(COUNT(*) AS BIGINT) AS n_test, round(CAST(SUM(term) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS pinball FROM t2 JOIN f ON t2.event_type = f.event_type GROUP BY 1 ORDER BY 1""",
-    // full-outer rank join -> max-rank census; pinned 0.9-power weights
-    "q461_rbo" ->
-      """WITH li AS (SELECT l_partkey, o_orderkey % 2 AS half, CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM lineitem JOIN orders ON l_orderkey = o_orderkey), r0 AS (SELECT item, ra FROM (SELECT l_partkey AS item, CAST(ROW_NUMBER() OVER (ORDER BY SUM(cents) DESC, l_partkey) AS BIGINT) AS ra FROM li WHERE half = 0 GROUP BY l_partkey) q WHERE ra <= 10), r1 AS (SELECT item, rb FROM (SELECT l_partkey AS item, CAST(ROW_NUMBER() OVER (ORDER BY SUM(cents) DESC, l_partkey) AS BIGINT) AS rb FROM li WHERE half = 1 GROUP BY l_partkey) q WHERE rb <= 10), j AS (SELECT GREATEST(COALESCE(ra, 11), COALESCE(rb, 11)) AS m FROM r0 FULL OUTER JOIN r1 USING (item)), jf AS (SELECT m FROM j WHERE m <= 10), sp AS (SELECT CAST(unnest(range(1, 11)) AS BIGINT) AS d), xd AS (SELECT d, CAST(COUNT(jf.m) AS BIGINT) AS x FROM sp LEFT JOIN jf ON jf.m <= sp.d GROUP BY d), tm AS (SELECT d, x, CAST(round([0.1, 0.09, 0.081, 0.0729, 0.06561, 0.059049, 0.0531441, 0.04782969, 0.043046721, 0.0387420489][CAST(d AS INTEGER)] * CAST(x AS DOUBLE) / CAST(d AS DOUBLE), 9) AS DECIMAL(18,9)) AS term FROM xd) SELECT CAST(10 AS BIGINT) AS k, MAX(CASE WHEN d = 10 THEN x END) AS overlap_at_k, round(CAST(SUM(term) AS DOUBLE), 6) AS rbo FROM tm""",
-    // known population shares reweight the biased sample; 1e-9 terms
-    "q462_post_stratify" ->
-      """WITH sp AS (SELECT c_nationkey, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY o_custkey, c_nationkey), pop AS (SELECT CAST(c_nationkey AS VARCHAR) AS h, CAST(COUNT(*) AS BIGINT) AS pop_n FROM customer GROUP BY 1), sm AS (SELECT CAST(c_nationkey AS VARCHAR) AS h, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(cents AS DECIMAL(38,0))) AS s, SUM(CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0))) AS ss FROM sp GROUP BY 1), j AS (SELECT pop.h, pop.pop_n, COALESCE(sm.n, 0) AS n, sm.s, sm.ss FROM pop LEFT JOIN sm USING (h)), t AS (SELECT CAST(SUM(pop_n) AS BIGINT) AS tot FROM j), f AS (SELECT j.*, CAST(pop_n AS DOUBLE) / CAST(t.tot AS DOUBLE) AS w, CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS mh, (CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)) / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) AS vh FROM j, t), f2 AS (SELECT h, pop_n, n, round(w, 9) AS w, CASE WHEN n > 0 THEN round(mh, 6) END AS mean_h, n > 0 AS covered, CASE WHEN n > 0 THEN CAST(round(w * mh, 9) AS DECIMAL(28,9)) ELSE CAST(0 AS DECIMAL(28,9)) END AS ty, CASE WHEN n > 1 THEN CAST(round(w * w * vh / CAST(n AS DOUBLE), 9) AS DECIMAL(28,9)) ELSE CAST(0 AS DECIMAL(28,9)) END AS tv FROM f) SELECT h, pop_n, n, w, mean_h, covered, round(CAST(SUM(ty) OVER () AS DOUBLE), 6) AS estimate, round(sqrt(CAST(SUM(tv) OVER () AS DOUBLE)), 6) AS se FROM f2 ORDER BY h""",
-    // entity-keyed pair melt; exact decimal moments; pinned r per pair
-    "q457_corr_matrix" ->
-      """WITH u AS (SELECT user_id AS id, CAST(COUNT(*) AS BIGINT) AS n_events, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents, CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchases FROM events GROUP BY 1), mel AS (SELECT id, 'n_events' AS m, n_events AS v FROM u UNION ALL SELECT id, 'cents', cents FROM u UNION ALL SELECT id, 'n_purchases', n_purchases FROM u), pr AS (SELECT a.m AS ma, b.m AS mb, a.v AS x, b.v AS y FROM mel a JOIN mel b ON a.id = b.id AND a.m < b.m), ag AS (SELECT ma, mb, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(y AS DECIMAL(38,0))) AS sy, SUM(CAST(x AS DECIMAL(38,0)) * y) AS sxy, SUM(CAST(x AS DECIMAL(38,0)) * x) AS sxx, SUM(CAST(y AS DECIMAL(38,0)) * y) AS syy FROM pr GROUP BY 1, 2), dn AS (SELECT *, sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) AS den FROM ag) SELECT ma, mb, n, round(CASE WHEN den <> 0.0 THEN (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / den END, 6) AS r FROM dn ORDER BY ma, mb""",
-    // the q408 decomposition read as a variance share; unbalanced n0
-    "q458_icc" ->
-      """WITH e AS (SELECT o_orderpriority AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM orders), pg AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n_g, SUM(CAST(v AS DECIMAL(38,0))) AS s_g, SUM(CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))) AS ss_g FROM e GROUP BY g), pt AS (SELECT *, CAST(round(CAST(s_g AS DOUBLE) * CAST(s_g AS DOUBLE) / CAST(n_g AS DOUBLE), 6) AS DECIMAL(38,6)) AS term FROM pg), m AS (SELECT CAST(SUM(n_g) AS BIGINT) AS nn, CAST(COUNT(*) AS BIGINT) AS k, SUM(s_g) AS s, SUM(ss_g) AS ss, SUM(term) AS tsum, SUM(CAST(n_g AS DECIMAL(38,0)) * n_g) AS sn2 FROM pt), f AS (SELECT k, nn, CAST(nn AS DOUBLE) AS n, CAST(k AS DOUBLE) AS kd, CAST(tsum AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(nn AS DOUBLE) AS ssb, CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(nn AS DOUBLE) AS sst, CAST(sn2 AS DOUBLE) AS sn2d FROM m), f2 AS (SELECT k, nn, ssb / (kd - 1.0) AS msb, (sst - ssb) / (n - kd) AS msw, (n - sn2d / n) / (kd - 1.0) AS n0 FROM f) SELECT k, nn AS n, round(CASE WHEN msw <> 0.0 THEN msb / msw END, 6) AS ms_ratio, round(n0, 6) AS n0, round(CASE WHEN msb + (n0 - 1.0) * msw <> 0.0 THEN (msb - msw) / (msb + (n0 - 1.0) * msw) END, 6) AS icc FROM f2""",
-    // the q456 moments re-read as NB(r, p); NULL when not overdispersed
-    "q459_negbin_fit" ->
-      """WITH h AS (SELECT event_type, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(COUNT(*) AS BIGINT) AS cnt FROM events GROUP BY 1, 2), m AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(cnt AS DECIMAL(38,0))) AS s, SUM(CAST(cnt AS DECIMAL(38,0)) * CAST(cnt AS DECIMAL(38,0))) AS ss FROM h GROUP BY 1 HAVING COUNT(*) >= 2), f AS (SELECT event_type, n, CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS mean, (CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)) / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) AS variance FROM m) SELECT event_type, n, round(mean, 6) AS mean, round(variance, 6) AS variance, round(CASE WHEN variance > mean AND mean > 0.0 THEN mean * mean / (variance - mean) END, 6) AS r_hat, round(CASE WHEN variance > mean AND mean > 0.0 THEN mean / variance END, 6) AS p_hat FROM f ORDER BY event_type""",
-    // c·ln c terms on the 1e-9 grid; NULLs as a sentinel category
-    "q460_entropy_profile" ->
-      """WITH mel AS (SELECT 'o_orderstatus' AS col_name, COALESCE(CAST(o_orderstatus AS VARCHAR), ' null') AS v FROM orders UNION ALL SELECT 'o_orderpriority', COALESCE(CAST(o_orderpriority AS VARCHAR), ' null') FROM orders UNION ALL SELECT 'o_custkey', COALESCE(CAST(o_custkey AS VARCHAR), ' null') FROM orders), c AS (SELECT col_name, v, CAST(COUNT(*) AS BIGINT) AS c FROM mel GROUP BY 1, 2), t AS (SELECT col_name, v, c, CAST(round(CAST(c AS DOUBLE) * ln(CAST(c AS DOUBLE)), 9) AS DECIMAL(18,9)) AS term FROM c), a AS (SELECT col_name, CAST(SUM(c) AS BIGINT) AS n, CAST(COUNT(*) AS BIGINT) AS n_distinct, SUM(term) AS clogc FROM t GROUP BY 1), f AS (SELECT *, ln(CAST(n AS DOUBLE)) - CAST(clogc AS DOUBLE) / CAST(n AS DOUBLE) AS h FROM a) SELECT col_name, n, n_distinct, round(h, 6) AS entropy_nats, round(CASE WHEN n_distinct > 1 THEN h / ln(CAST(n_distinct AS DOUBLE)) END, 6) AS entropy_norm FROM f ORDER BY col_name""",
-    // ln over exact integer cross-ratios (the q256 MI discipline);
-    // per-cell terms on the 1e-9 grid, decimal-summed per pair
-    "q455_jsd_matrix" -> jsdSql,
-    // the streamed hour-profile census store must equal the batch matrix
-    "q471_stream_jsd" -> jsdSql,
-    // integer count moments; VMR and (n−1)·VMR single pinned finishes
-    "q456_dispersion" ->
-      """WITH h AS (SELECT event_type, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(COUNT(*) AS BIGINT) AS cnt FROM events GROUP BY 1, 2), m AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(cnt AS DECIMAL(38,0))) AS s, SUM(CAST(cnt AS DECIMAL(38,0)) * CAST(cnt AS DECIMAL(38,0))) AS ss FROM h GROUP BY 1 HAVING COUNT(*) >= 2), f AS (SELECT event_type, n, s, CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS mean, (CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)) / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) AS variance FROM m) SELECT event_type, n, round(mean, 6) AS mean, round(variance, 6) AS variance, round(CASE WHEN s > 0 THEN variance / mean END, 6) AS vmr, round(CASE WHEN s > 0 THEN (CAST(n AS DOUBLE) - 1.0) * (variance / mean) END, 6) AS dispersion_stat FROM f ORDER BY event_type""",
-    // fingerprint → size census → histogram; shares pinned
-    "q451_dup_profile" ->
-      """WITH corp AS (SELECT props AS text FROM events UNION ALL SELECT text FROM documents), fp AS (SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp FROM corp), cl AS (SELECT fp, CAST(COUNT(*) AS BIGINT) AS s FROM fp GROUP BY fp), h AS (SELECT s AS cluster_size, CAST(COUNT(*) AS BIGINT) AS n_clusters FROM cl GROUP BY s), h2 AS (SELECT *, cluster_size * n_clusters AS n_docs FROM h), t AS (SELECT CAST(SUM(n_docs) AS BIGINT) AS total FROM h2) SELECT cluster_size, n_clusters, n_docs, round(CAST(n_docs AS DOUBLE) / CAST(t.total AS DOUBLE), 6) AS corpus_share, (cluster_size - 1) * n_clusters AS rows_removable FROM h2, t ORDER BY cluster_size""",
-    // endpoint-degree Pearson over both edge directions — exact moments
-    "q452_assortativity" ->
-      """WITH ed AS (SELECT DISTINCT o_custkey AS src, -l_suppkey AS dst FROM lineitem JOIN orders ON l_orderkey = o_orderkey), und AS (SELECT src, dst FROM ed UNION ALL SELECT dst, src FROM ed), deg AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS deg FROM und GROUP BY 1), pr AS (SELECT d1.deg AS x, d2.deg AS y FROM und JOIN deg d1 ON und.src = d1.node JOIN deg d2 ON und.dst = d2.node), m AS (SELECT CAST(COUNT(*) AS BIGINT) AS m, SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(y AS DECIMAL(38,0))) AS sy, SUM(CAST(x AS DECIMAL(38,0)) * y) AS sxy, SUM(CAST(x AS DECIMAL(38,0)) * x) AS sxx, SUM(CAST(y AS DECIMAL(38,0)) * y) AS syy FROM pr), nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes FROM deg), dn AS (SELECT m.m, sx, sy, sxy, sxx, syy, sqrt(CAST(m.m AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) * sqrt(CAST(m.m AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE)) AS den FROM m) SELECT nn.n_nodes, dn.m // 2 AS n_edges, round(CASE WHEN dn.den <> 0.0 THEN (CAST(dn.m AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / dn.den END, 6) AS assortativity FROM dn, nn""",
-    // melted covariates, exact side moments, pinned SMD per covariate
-    "q453_covariate_balance" ->
-      """WITH u AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_events, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents, CAST(SUM(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchases FROM events GROUP BY 1), mel AS (SELECT 'n_events' AS cov, user_id % 2 = 0 AS t, n_events AS v FROM u UNION ALL SELECT 'cents', user_id % 2 = 0, cents FROM u UNION ALL SELECT 'n_purchases', user_id % 2 = 0, n_purchases FROM u), m AS (SELECT cov, CAST(SUM(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS nt, CAST(SUM(CASE WHEN t THEN 0 ELSE 1 END) AS BIGINT) AS nc, SUM(CASE WHEN t THEN CAST(v AS DECIMAL(38,0)) ELSE 0 END) AS st, SUM(CASE WHEN NOT t THEN CAST(v AS DECIMAL(38,0)) ELSE 0 END) AS sc, SUM(CASE WHEN t THEN CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0)) ELSE 0 END) AS sst, SUM(CASE WHEN NOT t THEN CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0)) ELSE 0 END) AS ssc FROM mel GROUP BY cov), f AS (SELECT cov, nt, nc, CAST(st AS DOUBLE) / CAST(nt AS DOUBLE) AS mt, CAST(sc AS DOUBLE) / CAST(nc AS DOUBLE) AS mc, (CAST(nt AS DOUBLE) * CAST(sst AS DOUBLE) - CAST(st AS DOUBLE) * CAST(st AS DOUBLE)) / (CAST(nt AS DOUBLE) * (CAST(nt AS DOUBLE) - 1.0)) AS vt, (CAST(nc AS DOUBLE) * CAST(ssc AS DOUBLE) - CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE)) / (CAST(nc AS DOUBLE) * (CAST(nc AS DOUBLE) - 1.0)) AS vc FROM m), f2 AS (SELECT *, sqrt((vt + vc) / 2.0) AS pooled FROM f) SELECT cov, nt, nc, round(mt, 6) AS mean_t, round(mc, 6) AS mean_c, round(CASE WHEN pooled > 0.0 THEN (mt - mc) / pooled END, 6) AS smd, CASE WHEN pooled > 0.0 THEN abs((mt - mc) / pooled) < 0.1 END AS balanced FROM f2 ORDER BY cov""",
-    // cross-multiplied kappa over the 2×2 census — pure integers
-    "q447_cohen_kappa" ->
-      """WITH e AS (SELECT substr(o_orderpriority, 1, 1) IN ('1', '2') AS r1, o_orderstatus = 'F' AS r2 FROM orders), c AS (SELECT CAST(SUM(CASE WHEN r1 AND r2 THEN 1 ELSE 0 END) AS BIGINT) AS a, CAST(SUM(CASE WHEN r1 AND NOT r2 THEN 1 ELSE 0 END) AS BIGINT) AS b, CAST(SUM(CASE WHEN NOT r1 AND r2 THEN 1 ELSE 0 END) AS BIGINT) AS c, CAST(SUM(CASE WHEN NOT r1 AND NOT r2 THEN 1 ELSE 0 END) AS BIGINT) AS d FROM e), t AS (SELECT *, a + b + c + d AS n FROM c), k AS (SELECT *, CAST(a + b AS DECIMAL(38,0)) * (a + c) + CAST(c + d AS DECIMAL(38,0)) * (b + d) AS pe2 FROM t) SELECT a, b, c, d, n, round(CAST(a + d AS DOUBLE) / CAST(n AS DOUBLE), 6) AS p_observed, round(CASE WHEN CAST(n AS DECIMAL(38,0)) * n - pe2 <> 0 THEN CAST(CAST(n AS DECIMAL(38,0)) * (a + d) - pe2 AS DOUBLE) / CAST(CAST(n AS DECIMAL(38,0)) * n - pe2 AS DOUBLE) END, 6) AS kappa FROM k""",
-    // exact above-mean flags (v·n > S), one lag pass, pinned moments
-    "q448_runs_test" ->
-      """WITH h AS (SELECT event_type, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS v FROM events GROUP BY 1, 2), f AS (SELECT event_type AS k, hid AS t, CASE WHEN v * (COUNT(*) OVER (PARTITION BY event_type)) > (SUM(v) OVER (PARTITION BY event_type)) THEN 1 ELSE 0 END AS xi FROM h), r AS (SELECT k, t, xi, CASE WHEN LAG(xi) OVER (PARTITION BY k ORDER BY t) IS NULL OR LAG(xi) OVER (PARTITION BY k ORDER BY t) <> xi THEN 1 ELSE 0 END AS nw FROM f), a AS (SELECT k, CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(xi) AS BIGINT) AS n1, CAST(SUM(nw) AS BIGINT) AS runs FROM r GROUP BY k), a2 AS (SELECT *, n - n1 AS n0, CAST(2 AS DECIMAL(38,0)) * n1 * (n - n1) AS p FROM a) SELECT k, n, n1, n0, runs, round(CAST(p AS DOUBLE) / CAST(n AS DOUBLE) + 1.0, 6) AS expected_runs, round(CASE WHEN n1 > 0 AND n0 > 0 AND n > 1 THEN (CAST(runs AS DOUBLE) - (CAST(p AS DOUBLE) / CAST(n AS DOUBLE) + 1.0)) / sqrt(CAST(p AS DOUBLE) * (CAST(p AS DOUBLE) - CAST(n AS DOUBLE)) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) END, 6) AS z FROM a2 ORDER BY k""",
-    // two distinct windows, full-outer overlap, Chapman closed form
-    "q449_capture_recapture" ->
-      """WITH e AS (SELECT user_id, epoch_ns(ts) // 1000000000 AS sec FROM events), b AS (SELECT (MIN(sec) + MAX(sec)) // 2 AS mid FROM e), s1 AS (SELECT DISTINCT user_id FROM e, b WHERE sec <= b.mid), s2 AS (SELECT DISTINCT user_id FROM e, b WHERE sec > b.mid), j AS (SELECT s1.user_id IS NOT NULL AS in1, s2.user_id IS NOT NULL AS in2 FROM s1 FULL OUTER JOIN s2 ON s1.user_id = s2.user_id), a AS (SELECT CAST(SUM(CASE WHEN in1 THEN 1 ELSE 0 END) AS BIGINT) AS n1, CAST(SUM(CASE WHEN in2 THEN 1 ELSE 0 END) AS BIGINT) AS n2, CAST(SUM(CASE WHEN in1 AND in2 THEN 1 ELSE 0 END) AS BIGINT) AS m, CAST(COUNT(*) AS BIGINT) AS n_seen FROM j), f AS (SELECT *, CAST(n1 + 1 AS DOUBLE) * CAST(n2 + 1 AS DOUBLE) / CAST(m + 1 AS DOUBLE) - 1.0 AS nh, CAST(n1 + 1 AS DOUBLE) * CAST(n2 + 1 AS DOUBLE) * CAST(n1 - m AS DOUBLE) * CAST(n2 - m AS DOUBLE) / (CAST(m + 1 AS DOUBLE) * CAST(m + 1 AS DOUBLE) * CAST(m + 2 AS DOUBLE)) AS varn FROM a) SELECT n1, n2, m, n_seen, round(nh, 6) AS n_hat, round(sqrt(varn), 6) AS se, round(nh - 1.959964 * sqrt(varn), 6) AS ci_lo, round(nh + 1.959964 * sqrt(varn), 6) AS ci_hi FROM f""",
-    // header-vs-detail bias and limits of agreement; exact diffs
-    "q450_bland_altman" ->
-      """WITH li AS (SELECT l_orderkey, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS lc FROM lineitem GROUP BY 1), o AS (SELECT o_orderkey, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS oc FROM orders), d AS (SELECT oc - lc AS d FROM o JOIN li ON o_orderkey = l_orderkey), m AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(d AS DECIMAL(38,0))) AS s, SUM(CAST(d AS DECIMAL(38,0)) * CAST(d AS DECIMAL(38,0))) AS ss FROM d), f AS (SELECT n, CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS bias, CASE WHEN n > 1 THEN sqrt((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)) / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0))) END AS sd FROM m), f2 AS (SELECT *, bias - 1.959964 * sd AS lo, bias + 1.959964 * sd AS hi FROM f) SELECT f2.n, round(f2.bias, 6) AS bias, round(f2.sd, 6) AS sd_diff, round(f2.lo, 6) AS loa_lo, round(f2.hi, 6) AS loa_hi, CAST(SUM(CASE WHEN CAST(d.d AS DOUBLE) < f2.lo OR CAST(d.d AS DOUBLE) > f2.hi THEN 1 ELSE 0 END) AS BIGINT) AS n_outside FROM d, f2 GROUP BY 1, 2, 3, 4, 5""",
-    // shared n(n−1) denominators cancel: integer variance numerators
-    // to ONE pinned alpha; zero-filled (day × type) spine
-    "q444_cronbach_alpha" ->
-      """WITH e AS (SELECT epoch_ns(ts) // 1000000000 // 86400 AS day, event_type FROM events), cnt AS (SELECT day, event_type, CAST(COUNT(*) AS BIGINT) AS n FROM e GROUP BY 1, 2), sp AS (SELECT d.day, t.event_type FROM (SELECT DISTINCT day FROM e) d, (SELECT DISTINCT event_type FROM e) t), fl AS (SELECT sp.day AS o, sp.event_type AS i, COALESCE(cnt.n, 0) AS x FROM sp LEFT JOIN cnt ON sp.day = cnt.day AND sp.event_type = cnt.event_type), pi AS (SELECT i, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(x AS DECIMAL(38,0))) AS s, SUM(CAST(x AS DECIMAL(38,0)) * x) AS sxx FROM fl GROUP BY i), pv AS (SELECT *, CAST(n AS DECIMAL(38,0)) * sxx - s * s AS vnum FROM pi), to1 AS (SELECT o, SUM(CAST(x AS DECIMAL(38,0))) AS t FROM fl GROUP BY o), tm AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_obs, SUM(t) AS st, SUM(t * t) AS stt FROM to1), t2 AS (SELECT CAST(n_obs AS DECIMAL(38,0)) * stt - st * st AS tnum FROM tm), kk AS (SELECT CAST(COUNT(*) AS DECIMAL(38,0)) AS k, SUM(vnum) AS svnum FROM pv) SELECT pv.i, pv.n, round(CAST(vnum AS DOUBLE) / (CAST(pv.n AS DOUBLE) * (CAST(pv.n AS DOUBLE) - 1.0)), 6) AS var_i, round(CASE WHEN t2.tnum > 0 THEN CAST(kk.k AS DOUBLE) / (CAST(kk.k AS DOUBLE) - 1.0) * (1.0 - CAST(kk.svnum AS DOUBLE) / CAST(t2.tnum AS DOUBLE)) END, 6) AS alpha FROM pv, t2, kk ORDER BY pv.i""",
-    // pinned z literals summed as the SAME two literals on both engines
-    "q445_mde_report" ->
-      """WITH e AS (SELECT event_type AS g, CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM events), m AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(v AS DECIMAL(38,0))) AS s, SUM(CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))) AS sxx FROM e GROUP BY g), f AS (SELECT g, n, CAST(s AS DOUBLE) / CAST(n AS DOUBLE) AS mean, (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)) / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)) AS variance FROM m WHERE n >= 2), f2 AS (SELECT *, (1.959964 + 0.841621) * sqrt(variance) * sqrt(2.0 / (CAST(n AS DOUBLE) / 2.0)) AS mde FROM f) SELECT g, n, round(mean, 6) AS mean, round(variance, 6) AS variance, round(mde, 6) AS mde_abs, round(CASE WHEN mean <> 0.0 THEN mde / mean END, 6) AS mde_rel FROM f2 ORDER BY g""",
-    // integer Σx and Σ|Δx|; pinned limits; engine-exact point compares
-    "q446_xmr_chart" -> xmrSql,
-    // the streamed hourly-census store must equal the batch chart
-    "q454_stream_xmr" -> xmrSql,
-    // one moment pass, k²/2 pair frame, the q420 polynomial + step-up
-    "q442_pairwise_welch" ->
-      """WITH e AS (SELECT o_orderpriority AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM orders), m AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(v AS DECIMAL(38,0))) AS s, SUM(CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))) AS ss FROM e GROUP BY g), pr AS (SELECT a.g AS ga, b.g AS gb, CAST(a.n AS DOUBLE) AS na, CAST(b.n AS DOUBLE) AS nb, CAST(a.s AS DOUBLE) AS sa, CAST(b.s AS DOUBLE) AS sb, CAST(a.ss AS DOUBLE) AS saa, CAST(b.ss AS DOUBLE) AS sbb FROM m a JOIN m b ON a.g < b.g), tz AS (SELECT ga, gb, (sa / na - sb / nb) / sqrt(((na * saa - sa * sa) / (na * (na - 1.0))) / na + ((nb * sbb - sb * sb) / (nb * (nb - 1.0))) / nb) AS t FROM pr), pt AS (SELECT ga, gb, t, 1.0 / (1.0 + 0.2316419 * abs(t)) AS tt FROM tz), pp AS (SELECT ga, gb, round(t, 6) AS t_stat, round(2.0 * 0.3989422804014327 * exp(-(abs(t) * abs(t)) / 2.0) * ((((1.330274429 * tt - 1.821255978) * tt + 1.781477937) * tt - 0.356563782) * tt + 0.319381530) * tt, 9) AS p FROM pt), bh AS (SELECT *, ga || '|' || gb AS pair FROM pp), r1 AS (SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY p, pair) AS BIGINT) AS p_rank, CAST(COUNT(*) OVER () AS BIGINT) AS m FROM bh), km AS (SELECT MAX(CASE WHEN p * CAST(m AS DOUBLE) <= CAST(p_rank AS DOUBLE) * 0.05 THEN p_rank END) AS kmax FROM r1) SELECT ga, gb, t_stat, p, p_rank, round(CAST(p_rank AS DOUBLE) * 0.05 / CAST(m AS DOUBLE), 9) AS bh_crit, (km.kmax IS NOT NULL AND p_rank <= km.kmax) AS rejected FROM r1, km ORDER BY p_rank""",
-    // per-stratum 2×2 terms on the 1e-9 grid, decimal-summed; two
-    // pinned ratios (no continuity correction, as documented)
-    "q443_mantel_haenszel" ->
-      """WITH e AS (SELECT CAST(year(o_orderdate) AS VARCHAR) AS stratum, substr(o_orderpriority, 1, 1) IN ('1', '2') AS ex, o_orderstatus = 'F' AS oc FROM orders), cl AS (SELECT stratum, CAST(SUM(CASE WHEN ex AND oc THEN 1 ELSE 0 END) AS BIGINT) AS a, CAST(SUM(CASE WHEN ex AND NOT oc THEN 1 ELSE 0 END) AS BIGINT) AS b, CAST(SUM(CASE WHEN NOT ex AND oc THEN 1 ELSE 0 END) AS BIGINT) AS c, CAST(SUM(CASE WHEN NOT ex AND NOT oc THEN 1 ELSE 0 END) AS BIGINT) AS d FROM e GROUP BY 1), t2 AS (SELECT *, a + b + c + d AS n FROM cl), t3 AS (SELECT *, CAST(round(CAST(a AS DOUBLE) * CAST(d AS DOUBLE) / CAST(n AS DOUBLE), 9) AS DECIMAL(18,9)) AS ad, CAST(round(CAST(b AS DOUBLE) * CAST(c AS DOUBLE) / CAST(n AS DOUBLE), 9) AS DECIMAL(18,9)) AS bc, CAST(round(CAST(a + b AS DOUBLE) * CAST(a + c AS DOUBLE) / CAST(n AS DOUBLE), 9) AS DECIMAL(18,9)) AS e1, CASE WHEN n > 1 THEN CAST(round(CAST(a + b AS DOUBLE) * CAST(c + d AS DOUBLE) * CAST(a + c AS DOUBLE) * CAST(b + d AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0)), 9) AS DECIMAL(18,9)) ELSE CAST(0 AS DECIMAL(18,9)) END AS v1 FROM t2), ag AS (SELECT SUM(ad) AS sad, SUM(bc) AS sbc, SUM(e1) AS se1, SUM(v1) AS sv1, CAST(SUM(a) AS BIGINT) AS sa FROM t3) SELECT t3.stratum, t3.a, t3.b, t3.c, t3.d, round(CASE WHEN CAST(sbc AS DOUBLE) > 0.0 THEN CAST(sad AS DOUBLE) / CAST(sbc AS DOUBLE) END, 6) AS or_mh, round(CASE WHEN CAST(sv1 AS DOUBLE) > 0.0 THEN (CAST(sa AS DOUBLE) - CAST(se1 AS DOUBLE)) * (CAST(sa AS DOUBLE) - CAST(se1 AS DOUBLE)) / CAST(sv1 AS DOUBLE) END, 6) AS cmh_chi2 FROM t3, ag ORDER BY t3.stratum""",
-    // pooled census lower median; 2×k chi2 in cross-multiplied integers
-    // on the 1e-9 grid (the srm form); degenerate splits NULL
-    "q441_mood_median" ->
-      """WITH e AS (SELECT o_orderstatus AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM orders), cen AS (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS t FROM e GROUP BY 1, 2), pl AS (SELECT v, CAST(SUM(t) AS BIGINT) AS t FROM cen GROUP BY v), rk AS (SELECT v, t, CAST(SUM(t) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c, CAST(SUM(t) OVER () AS BIGINT) AS n FROM pl), md AS (SELECT MIN(v) AS med FROM rk WHERE c >= (n + 1) // 2), pg AS (SELECT g, CAST(SUM(t) AS BIGINT) AS n_g, CAST(SUM(CASE WHEN v > md.med THEN t ELSE 0 END) AS BIGINT) AS n_above FROM cen, md GROUP BY g), st AS (SELECT *, CAST(SUM(n_g) OVER () AS BIGINT) AS nn, CAST(SUM(n_above) OVER () AS BIGINT) AS aa FROM pg), t2 AS (SELECT *, CAST(n_above AS DECIMAL(38,0)) * nn - CAST(n_g AS DECIMAL(38,0)) * aa AS d FROM st), t3 AS (SELECT *, CASE WHEN aa > 0 AND aa < nn THEN CAST(round(CAST(d AS DOUBLE) * CAST(d AS DOUBLE) / (CAST(nn AS DOUBLE) * CAST(n_g AS DOUBLE) * CAST(aa AS DOUBLE)), 9) AS DECIMAL(18,9)) + CAST(round(CAST(d AS DOUBLE) * CAST(d AS DOUBLE) / (CAST(nn AS DOUBLE) * CAST(n_g AS DOUBLE) * CAST(nn - aa AS DOUBLE)), 9) AS DECIMAL(18,9)) END AS term FROM t2) SELECT g, n_g, n_above, round(CAST(n_g AS DOUBLE) * CAST(aa AS DOUBLE) / CAST(nn AS DOUBLE), 6) AS expected_above, round(CAST(SUM(term) OVER () AS DOUBLE), 6) AS chi2 FROM t3 ORDER BY g""",
-    // per-step running-mean deviations on the 1e-9 grid; exact decimal
-    // cumsum/min folds; peak tie broken by earliest bucket
-    "q438_page_hinkley" ->
-      """WITH h AS (SELECT event_type, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS v FROM events GROUP BY 1, 2), w1 AS (SELECT event_type, hid, v, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hid) AS rn, SUM(v) OVER (PARTITION BY event_type ORDER BY hid ROWS UNBOUNDED PRECEDING) AS s FROM h), t2 AS (SELECT event_type, hid, CAST(round(CAST(v AS DOUBLE) - CAST(s AS DOUBLE) / CAST(rn AS DOUBLE) - 0.0, 9) AS DECIMAL(28,9)) AS term FROM w1), m1 AS (SELECT event_type, hid, SUM(term) OVER (PARTITION BY event_type ORDER BY hid ROWS UNBOUNDED PRECEDING) AS m FROM t2), p1 AS (SELECT event_type, hid, m - MIN(m) OVER (PARTITION BY event_type ORDER BY hid ROWS UNBOUNDED PRECEDING) AS ph FROM m1), pk2 AS (SELECT event_type, hid, ph, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY ph DESC, hid) AS pr FROM p1), ag AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n, MIN(CASE WHEN CAST(ph AS DOUBLE) > 100000.0 THEN hid END) AS alarm_bucket FROM p1 GROUP BY 1) SELECT ag.event_type, ag.n, round(CAST(pk2.ph AS DOUBLE), 6) AS max_ph, pk2.hid AS peak_bucket, ag.alarm_bucket, ag.alarm_bucket IS NOT NULL AS alarmed FROM ag JOIN pk2 ON ag.event_type = pk2.event_type AND pk2.pr = 1 ORDER BY ag.event_type""",
-    // per-season integer pair counts and variance numerators, summed
-    // exact before the single /18; continuity-corrected Z on the total
-    "q439_seasonal_mk" ->
-      """WITH h AS (SELECT event_type AS k, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS v FROM events GROUP BY 1, 2), b AS (SELECT k, hid % 24 AS h, hid // 24 AS t, v FROM h), s AS (SELECT a.k, CAST(SUM(CASE WHEN b2.v > a.v THEN 1 WHEN b2.v < a.v THEN -1 ELSE 0 END) AS BIGINT) AS s FROM b a JOIN b b2 ON a.k = b2.k AND a.h = b2.h AND a.t < b2.t GROUP BY a.k), tj AS (SELECT k, h, v, CAST(COUNT(*) AS BIGINT) AS tj FROM b GROUP BY 1, 2, 3), ts2 AS (SELECT k, h, CAST(SUM(tj * (tj - 1) * (2 * tj + 5)) AS BIGINT) AS tsum, CAST(SUM(tj) AS BIGINT) AS n_h FROM tj GROUP BY 1, 2), ps AS (SELECT k, CAST(SUM(n_h) AS BIGINT) AS n, CAST(COUNT(*) AS BIGINT) AS n_seasons, CAST(SUM(n_h * (n_h - 1) * (2 * n_h + 5) - tsum) AS BIGINT) AS numvar FROM ts2 GROUP BY k) SELECT s.k, ps.n, ps.n_seasons, s.s, round(CAST(numvar AS DOUBLE) / 18.0, 6) AS var_s, round(CASE WHEN s.s > 0 THEN (CAST(s.s AS DOUBLE) - 1.0) / sqrt(CAST(numvar AS DOUBLE) / 18.0) WHEN s.s < 0 THEN (CAST(s.s AS DOUBLE) + 1.0) / sqrt(CAST(numvar AS DOUBLE) / 18.0) ELSE 0.0 END, 6) AS z FROM s JOIN ps ON s.k = ps.k WHERE numvar > 0 ORDER BY s.k""",
-    // doubled census ranks make Σ rank·x exact with ties; top-4 SUM is
-    // tie-invariant (equal values); string group keys on both sides
-    "q436_concentration" ->
-      """WITH sp AS (SELECT CAST(c_nationkey AS VARCHAR) AS g, c_custkey, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS x FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1, 2), cen AS (SELECT g, x, CAST(COUNT(*) AS BIGINT) AS t FROM sp GROUP BY 1, 2), rk AS (SELECT g, x, t, CAST(2 * SUM(t) OVER (PARTITION BY g ORDER BY x ROWS UNBOUNDED PRECEDING) - t + 1 AS BIGINT) AS r2 FROM cen), ag AS (SELECT g, CAST(SUM(t) AS BIGINT) AS n, SUM(CAST(x AS DECIMAL(38,0)) * t) AS s, SUM(CAST(x AS DECIMAL(38,0)) * x * t) AS sxx, SUM(CAST(t AS DECIMAL(38,0)) * r2 * x) AS rx FROM rk GROUP BY g), tp AS (SELECT g, SUM(CAST(x AS DECIMAL(38,0))) AS top4 FROM (SELECT g, x, ROW_NUMBER() OVER (PARTITION BY g ORDER BY x DESC) AS rn FROM sp) q WHERE rn <= 4 GROUP BY g) SELECT ag.g, ag.n, CAST(ag.s AS BIGINT) AS total, round(CASE WHEN ag.s <> 0 THEN (CAST(rx AS DOUBLE) - (CAST(n AS DOUBLE) + 1.0) * CAST(s AS DOUBLE)) / (CAST(n AS DOUBLE) * CAST(s AS DOUBLE)) END, 6) AS gini, round(CASE WHEN ag.s <> 0 THEN CAST(sxx AS DOUBLE) / (CAST(s AS DOUBLE) * CAST(s AS DOUBLE)) END, 6) AS hhi, round(CASE WHEN ag.s <> 0 THEN CAST(COALESCE(tp.top4, 0) AS DOUBLE) / CAST(s AS DOUBLE) END, 6) AS cr4 FROM ag LEFT JOIN tp ON ag.g = tp.g ORDER BY ag.g""",
-    // zero-filled spine; the above-average flag is an exact integer
-    // compare; Q from pure integer treatment/block census sums
-    "q437_cochran_q" ->
-      """WITH e AS (SELECT epoch_ns(ts) // 1000000000 // 86400 AS day, event_type FROM events), cnt AS (SELECT day, event_type, CAST(COUNT(*) AS BIGINT) AS n FROM e GROUP BY 1, 2), sp AS (SELECT d.day, t.event_type FROM (SELECT DISTINCT day FROM e) d, (SELECT DISTINCT event_type FROM e) t), fl AS (SELECT sp.day, sp.event_type, COALESCE(cnt.n, 0) AS n FROM sp LEFT JOIN cnt ON sp.day = cnt.day AND sp.event_type = cnt.event_type), ab AS (SELECT day AS b, event_type AS j, CASE WHEN n * (COUNT(*) OVER (PARTITION BY day)) > (SUM(n) OVER (PARTITION BY day)) THEN 1 ELSE 0 END AS x FROM fl), pt AS (SELECT j, CAST(COUNT(*) AS BIGINT) AS n_b, CAST(SUM(x) AS BIGINT) AS c_j FROM ab GROUP BY j), bm AS (SELECT SUM(CAST(ri AS DECIMAL(38,0))) AS t, SUM(CAST(ri AS DECIMAL(38,0)) * ri) AS sr2 FROM (SELECT b, CAST(SUM(x) AS BIGINT) AS ri FROM ab GROUP BY b) q), tt AS (SELECT CAST(COUNT(*) AS DECIMAL(38,0)) AS k, SUM(CAST(c_j AS DECIMAL(38,0)) * c_j) AS sc2 FROM pt) SELECT pt.j, pt.n_b, pt.c_j, round(CASE WHEN tt.k * bm.t - bm.sr2 <> 0 THEN CAST(tt.k - 1 AS DOUBLE) * CAST(tt.k * sc2 - bm.t * bm.t AS DOUBLE) / CAST(tt.k * bm.t - bm.sr2 AS DOUBLE) END, 6) AS q_stat FROM pt, bm, tt ORDER BY pt.j""",
-    // stopword-island segmentation; degree/freq on the 1e-9 grid,
-    // decimal phrase sums; identical text ⇒ identical score
-    "q434_rake_keywords" ->
-      """WITH wl AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS ws FROM documents), tk AS (SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws, 1) AS pos FROM wl), st AS (SELECT doc_id, pos, w, (w IN ('the', 'a', 'an', 'and', 'of', 'to', 'in', 'is', 'on', 'for', 'with', 'as', 'by', 'at', 'or', 'be', 'this', 'that', 'it', 'from') OR w = '') AS stop FROM tk), gp AS (SELECT doc_id, pos, w, stop, SUM(CASE WHEN stop THEN 1 ELSE 0 END) OVER (PARTITION BY doc_id ORDER BY pos ROWS UNBOUNDED PRECEDING) AS grp FROM st), ph AS (SELECT doc_id, grp, pos, w, COUNT(*) OVER (PARTITION BY doc_id, grp) AS plen FROM gp WHERE NOT stop), ws2 AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS freq, CAST(SUM(plen) AS BIGINT) AS deg FROM ph GROUP BY w), wsc AS (SELECT w, CAST(round(CAST(deg AS DOUBLE) / CAST(freq AS DOUBLE), 9) AS DECIMAL(18,9)) AS wscore FROM ws2), pr AS (SELECT ph.doc_id, ph.grp, string_agg(ph.w, ' ' ORDER BY ph.pos) AS phrase, CAST(COUNT(*) AS BIGINT) AS n_words, SUM(wsc.wscore) AS score FROM ph JOIN wsc ON ph.w = wsc.w GROUP BY 1, 2), dd AS (SELECT phrase, MAX(n_words) AS n_words, CAST(COUNT(*) AS BIGINT) AS n_occurrences, MAX(score) AS score FROM pr GROUP BY phrase), rk AS (SELECT *, ROW_NUMBER() OVER (ORDER BY score DESC, phrase) AS rnk FROM dd) SELECT CAST(rnk AS BIGINT) AS rank, phrase, n_words, n_occurrences, round(CAST(score AS DOUBLE), 6) AS score FROM rk WHERE rnk <= 20 ORDER BY rank""",
-    // doubled-J integer pair census; tie-corrected variance from pure
-    // integer census sums; one pinned Z broadcast per group
-    "q435_jonckheere" ->
-      """WITH e AS (SELECT CAST(substr(o_orderpriority, 1, 1) AS BIGINT) AS g, CAST(l_quantity AS BIGINT) AS v FROM lineitem JOIN orders ON l_orderkey = o_orderkey), c AS (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS t FROM e GROUP BY 1, 2), j AS (SELECT COALESCE(SUM(CAST(a.t AS DECIMAL(38,0)) * b.t * (CASE WHEN a.v < b.v THEN 2 WHEN a.v = b.v THEN 1 ELSE 0 END)), 0) AS j2 FROM c a JOIN c b ON a.g < b.g), gr AS (SELECT g, CAST(SUM(t) AS BIGINT) AS n_g, SUM(CAST(v AS DECIMAL(38,0)) * t) AS sv FROM c GROUP BY g), gm AS (SELECT SUM(CAST(n_g AS DECIMAL(38,0))) AS n, SUM(CAST(n_g AS DECIMAL(38,0)) * n_g) AS sn2, SUM(CAST(n_g AS DECIMAL(38,0)) * (n_g - 1)) AS u1, SUM(CAST(n_g AS DECIMAL(38,0)) * (n_g - 1) * (2 * n_g + 5)) AS u2, SUM(CAST(n_g AS DECIMAL(38,0)) * (n_g - 1) * (n_g - 2)) AS u3 FROM gr), tv AS (SELECT v, CAST(SUM(t) AS BIGINT) AS tu FROM c GROUP BY v), tm AS (SELECT COALESCE(SUM(CAST(tu AS DECIMAL(38,0)) * (tu - 1)), 0) AS w1, COALESCE(SUM(CAST(tu AS DECIMAL(38,0)) * (tu - 1) * (2 * tu + 5)), 0) AS w2, COALESCE(SUM(CAST(tu AS DECIMAL(38,0)) * (tu - 1) * (tu - 2)), 0) AS w3 FROM tv), fin AS (SELECT gr.g, gr.n_g, gr.sv, j.j2, CAST(gm.n AS DOUBLE) AS nd, gm.sn2, gm.u1, gm.u2, gm.u3, tm.w1, tm.w2, tm.w3, gm.n FROM gr, j, gm, tm), vv AS (SELECT *, (nd * (nd - 1.0) * (2.0 * nd + 5.0) - CAST(u2 AS DOUBLE) - CAST(w2 AS DOUBLE)) / 72.0 + CAST(u3 AS DOUBLE) * CAST(w3 AS DOUBLE) / (36.0 * nd * (nd - 1.0) * (nd - 2.0)) + CAST(u1 AS DOUBLE) * CAST(w1 AS DOUBLE) / (8.0 * nd * (nd - 1.0)) AS varj FROM fin) SELECT g, n_g, round(CAST(sv AS DOUBLE) / CAST(n_g AS DOUBLE), 6) AS mean_v, CAST(j2 AS DOUBLE) / 2.0 AS j_stat, round(CASE WHEN varj > 0.0 THEN (CAST(j2 AS DOUBLE) - CAST(n * n - sn2 AS DOUBLE) / 2.0) / (2.0 * sqrt(varj)) END, 6) AS z FROM vv ORDER BY g""",
-    // pinned discount/IDCG literals; exact-division terms on the
-    // 1e-12 decimal grid; same-label relevance from the label census
-    "q431_ranking_metrics" ->
-      s"""$VEC_MACROS; WITH qv AS (SELECT vec_id AS qid, embedding AS qe, label AS qlabel FROM embeddings WHERE vec_id < 8), sc AS (SELECT qv.qid, qv.qlabel, e.vec_id AS nid, round(pcos(qv.qe, e.embedding), 4) AS score, CASE WHEN e.label = qv.qlabel THEN 1 ELSE 0 END AS rel FROM qv CROSS JOIN embeddings e WHERE e.vec_id <> qv.qid), rk AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC NULLS LAST, nid) AS rnk FROM sc), tk AS (SELECT *, CAST(SUM(rel) OVER (PARTITION BY qid ORDER BY rnk ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cumrel FROM rk WHERE rnk <= 10), pq AS (SELECT qid, qlabel, CAST(SUM(rel) AS BIGINT) AS n_rel_at_k, MIN(CASE WHEN rel = 1 THEN rnk END) AS first_rel, SUM(CAST(round(CASE WHEN rel = 1 THEN CAST(cumrel AS DOUBLE) / CAST(rnk AS DOUBLE) ELSE 0.0 END, 12) AS DECIMAL(18,12))) AS ap_sum, SUM(CAST(round(CASE WHEN rel = 1 THEN [1.000000000000, 0.630929753571, 0.500000000000, 0.430676558073, 0.386852807235, 0.356207187108, 0.333333333333, 0.315464876786, 0.301029995664, 0.289064826318][CAST(rnk AS INTEGER)] ELSE 0.0 END, 12) AS DECIMAL(18,12))) AS dcg FROM tk GROUP BY 1, 2), lc AS (SELECT label, CAST(COUNT(*) AS BIGINT) AS n_label FROM embeddings GROUP BY 1), fin AS (SELECT pq.*, COALESCE(lc.n_label - 1, 0) AS r_total, LEAST(COALESCE(lc.n_label - 1, 0), 10) AS eff_k FROM pq LEFT JOIN lc ON pq.qlabel = lc.label) SELECT qid, qlabel AS label, r_total, n_rel_at_k, CASE WHEN eff_k > 0 THEN round(COALESCE(1.0 / CAST(first_rel AS DOUBLE), 0.0), 6) END AS mrr, CASE WHEN eff_k > 0 THEN round(CAST(ap_sum AS DOUBLE) / CAST(eff_k AS DOUBLE), 6) END AS ap, CASE WHEN eff_k > 0 THEN round(CAST(dcg AS DOUBLE) / ([0.000000000000, 1.000000000000, 1.630929753571, 2.130929753571, 2.561606311645, 2.948459118879, 3.304666305987, 3.637999639321, 3.953464516106, 4.254494511770, 4.543559338088][CAST(eff_k AS INTEGER) + 1]), 6) END AS ndcg FROM fin ORDER BY qid""",
-    // IEEE-exact sqrt weights on the 1e-6 grid, decimal-summed; one
-    // pinned ratio per group
-    "q432_temperature_mix" ->
-      """WITH d AS (SELECT lang AS g, CAST(array_length(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS BIGINT) AS tokens FROM documents), c AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(tokens) AS BIGINT) AS n_tokens FROM d GROUP BY g), w AS (SELECT *, CAST(round(sqrt(CAST(n_tokens AS DOUBLE)), 6) AS DECIMAL(18,6)) AS w FROM c), z AS (SELECT SUM(w) AS z FROM w) SELECT g, n_docs, n_tokens, round(CAST(w.w AS DOUBLE) / CAST(z.z AS DOUBLE), 9) AS weight, round(CAST(w.w AS DOUBLE) / CAST(z.z AS DOUBLE) * 1000000.0, 6) AS tokens_per_epoch, round(CAST(w.w AS DOUBLE) / CAST(z.z AS DOUBLE) * 1000000.0 / CAST(n_tokens AS DOUBLE), 6) AS eff_epochs FROM w, z ORDER BY g""",
-    // census order-stat medians, then the q408 F replay on |x − med|
-    "q428_brown_forsythe" ->
-      """WITH e AS (SELECT o_orderpriority AS g, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM orders), cen AS (SELECT g, v, CAST(COUNT(*) AS BIGINT) AS t FROM e GROUP BY 1, 2), rk AS (SELECT g, v, t, CAST(SUM(t) OVER (PARTITION BY g ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c, CAST(SUM(t) OVER (PARTITION BY g) AS BIGINT) AS n_g FROM cen), md AS (SELECT g, MIN(v) AS med FROM rk WHERE c >= (n_g + 1) // 2 GROUP BY g), z AS (SELECT cen.g, abs(cen.v - md.med) AS z, cen.t, md.med FROM cen JOIN md ON cen.g = md.g), pg AS (SELECT g, CAST(SUM(t) AS BIGINT) AS n_g, MAX(med) AS med, SUM(CAST(z AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0))) AS s_g, SUM(CAST(z AS DECIMAL(38,0)) * CAST(z AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0))) AS ss_g FROM z GROUP BY g), pt AS (SELECT *, CAST(round(CAST(s_g AS DOUBLE) * CAST(s_g AS DOUBLE) / CAST(n_g AS DOUBLE), 6) AS DECIMAL(38,6)) AS term FROM pg), t AS (SELECT CAST(SUM(n_g) AS DOUBLE) AS n, CAST(COUNT(*) AS DOUBLE) AS k, CAST(SUM(s_g) AS DOUBLE) AS s, CAST(SUM(ss_g) AS DOUBLE) AS ss, CAST(SUM(term) AS DOUBLE) AS tsum FROM pt) SELECT g, n_g, med, round(CAST(s_g AS DOUBLE) / CAST(n_g AS DOUBLE), 6) AS mad_mean, round(((t.tsum - t.s * t.s / t.n) / (t.k - 1.0)) / (((t.ss - t.s * t.s / t.n) - (t.tsum - t.s * t.s / t.n)) / (t.n - t.k)), 6) AS bf_stat FROM pt, t ORDER BY g""",
-    // cross-multiplied LB autocorrelations; 1e-9 terms, pinned Q
-    "q429_ljung_box" ->
-      """WITH h AS (SELECT event_type, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS v FROM events GROUP BY 1, 2), mo AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(v AS DECIMAL(38,0))) AS s, SUM(CAST(v AS DECIMAL(38,0)) * CAST(v AS DECIMAL(38,0))) AS ssq FROM h GROUP BY 1), lg AS (SELECT event_type, k, v, w FROM (SELECT event_type, v, LAG(v, 1) OVER (PARTITION BY event_type ORDER BY hid) AS w, CAST(1 AS BIGINT) AS k FROM h UNION ALL SELECT event_type, v, LAG(v, 2) OVER (PARTITION BY event_type ORDER BY hid), 2 FROM h UNION ALL SELECT event_type, v, LAG(v, 3) OVER (PARTITION BY event_type ORDER BY hid), 3 FROM h UNION ALL SELECT event_type, v, LAG(v, 4) OVER (PARTITION BY event_type ORDER BY hid), 4 FROM h UNION ALL SELECT event_type, v, LAG(v, 5) OVER (PARTITION BY event_type ORDER BY hid), 5 FROM h UNION ALL SELECT event_type, v, LAG(v, 6) OVER (PARTITION BY event_type ORDER BY hid), 6 FROM h) q WHERE w IS NOT NULL), a AS (SELECT event_type, k, SUM(CAST(v AS DECIMAL(38,0)) * CAST(w AS DECIMAL(38,0))) AS sp, SUM(CAST(v AS DECIMAL(38,0))) AS sx, SUM(CAST(w AS DECIMAL(38,0))) AS sy FROM lg GROUP BY 1, 2), r AS (SELECT a.event_type, a.k, mo.n, CAST(CAST(mo.n AS DECIMAL(38,0)) * mo.n * a.sp - CAST(mo.n AS DECIMAL(38,0)) * mo.s * (a.sx + a.sy) + (CAST(mo.n AS DECIMAL(38,0)) - a.k) * mo.s * mo.s AS DOUBLE) / CAST(CAST(mo.n AS DECIMAL(38,0)) * mo.n * mo.ssq - CAST(mo.n AS DECIMAL(38,0)) * mo.s * mo.s AS DOUBLE) AS r FROM a JOIN mo ON a.event_type = mo.event_type WHERE mo.n > a.k AND CAST(mo.n AS DECIMAL(38,0)) * mo.ssq <> mo.s * mo.s), tm AS (SELECT event_type, n, k, r, CAST(round(r * r / CAST(n - k AS DOUBLE), 9) AS DECIMAL(18,9)) AS term FROM r) SELECT event_type, MAX(n) AS n, CAST(COUNT(*) AS BIGINT) AS m, round(MAX(CASE WHEN k = 1 THEN r END), 6) AS r1, round(CAST(MAX(n) AS DOUBLE) * (CAST(MAX(n) AS DOUBLE) + 2.0) * CAST(SUM(term) AS DOUBLE), 6) AS q_stat FROM tm GROUP BY event_type ORDER BY event_type""",
-    // zero-filled (day × type) spine; doubled in-block ranks; tie-
-    // corrected χ² from pure integers
-    "q430_friedman" ->
-      """WITH e AS (SELECT epoch_ns(ts) // 1000000000 // 86400 AS day, event_type FROM events), cnt AS (SELECT day, event_type, CAST(COUNT(*) AS BIGINT) AS n FROM e GROUP BY 1, 2), sp AS (SELECT d.day, t.event_type FROM (SELECT DISTINCT day FROM e) d, (SELECT DISTINCT event_type FROM e) t), fl AS (SELECT sp.day AS b, sp.event_type AS j, COALESCE(cnt.n, 0) AS v FROM sp LEFT JOIN cnt ON sp.day = cnt.day AND sp.event_type = cnt.event_type), cen AS (SELECT b, v, CAST(COUNT(*) AS BIGINT) AS t FROM fl GROUP BY 1, 2), rk AS (SELECT b, v, t, CAST(2 * SUM(t) OVER (PARTITION BY b ORDER BY v ROWS UNBOUNDED PRECEDING) - t + 1 AS BIGINT) AS r2 FROM cen), wr AS (SELECT fl.j, rk.r2 FROM fl JOIN rk ON fl.b = rk.b AND fl.v = rk.v), pt AS (SELECT j, CAST(COUNT(*) AS BIGINT) AS n_b, SUM(CAST(r2 AS DECIMAL(38,0))) AS r2sum FROM wr GROUP BY j), sq AS (SELECT SUM(CAST(t AS DECIMAL(38,0)) * CAST(r2 AS DECIMAL(38,0)) * CAST(r2 AS DECIMAL(38,0))) AS r2sq FROM rk), tt AS (SELECT CAST(COUNT(*) AS DECIMAL(38,0)) AS k FROM pt), nm AS (SELECT SUM((r2sum - CAST(n_b AS DECIMAL(38,0)) * (tt.k + 1)) * (r2sum - CAST(n_b AS DECIMAL(38,0)) * (tt.k + 1))) AS num, MAX(n_b) AS b FROM pt, tt), dn AS (SELECT sq.r2sq - CAST(nm.b AS DECIMAL(38,0)) * tt.k * (tt.k + 1) * (tt.k + 1) AS den FROM sq, nm, tt) SELECT pt.j, pt.n_b, CAST(pt.r2sum AS DOUBLE) / 2.0 AS rank_sum, round(CASE WHEN dn.den <> 0 THEN CAST(tt.k - 1 AS DOUBLE) * CAST(nm.num AS DOUBLE) / CAST(dn.den AS DOUBLE) END, 6) AS chi2 FROM pt, tt, nm, dn ORDER BY pt.j""",
-    // exact pair counts on the cell census, both tie corrections
-    "q424_kendall_tau" ->
-      """WITH c AS (SELECT CAST(l_quantity AS BIGINT) AS x, CAST(l_linenumber AS BIGINT) AS y, CAST(COUNT(*) AS BIGINT) AS c FROM lineitem GROUP BY 1, 2), p AS (SELECT SUM(CASE WHEN b.y > a.y THEN CAST(a.c AS DECIMAL(38,0)) * b.c END) AS cc, SUM(CASE WHEN b.y < a.y THEN CAST(a.c AS DECIMAL(38,0)) * b.c END) AS dd FROM c a JOIN c b ON b.x > a.x AND b.y <> a.y), m AS (SELECT CAST(SUM(c) AS DECIMAL(38,0)) AS n FROM c), tx AS (SELECT SUM(CAST(t AS DECIMAL(38,0)) * (t - 1)) AS tx2 FROM (SELECT x, CAST(SUM(c) AS BIGINT) AS t FROM c GROUP BY x)), ty AS (SELECT SUM(CAST(t AS DECIMAL(38,0)) * (t - 1)) AS ty2 FROM (SELECT y, CAST(SUM(c) AS BIGINT) AS t FROM c GROUP BY y)) SELECT CAST(m.n AS BIGINT) AS n, CAST(p.cc AS BIGINT) AS concordant, CAST(p.dd AS BIGINT) AS discordant, round((CAST(p.cc AS DOUBLE) - CAST(p.dd AS DOUBLE)) / sqrt((CAST(m.n AS DOUBLE) * (CAST(m.n AS DOUBLE) - 1.0) - CAST(tx.tx2 AS DOUBLE)) / 2.0 * ((CAST(m.n AS DOUBLE) * (CAST(m.n AS DOUBLE) - 1.0) - CAST(ty.ty2 AS DOUBLE)) / 2.0)), 6) AS tau_b FROM p, m, tx, ty""",
-    // full R-by-C spine: empty cells pay their expected-count term
-    "q425_cramers_v" ->
-      """WITH c AS (SELECT CAST(o_orderstatus AS VARCHAR) AS x, CAST(o_orderpriority AS VARCHAR) AS y, CAST(COUNT(*) AS BIGINT) AS o FROM orders GROUP BY 1, 2), sp AS (SELECT dx.x, dy.y, CAST(COALESCE(c.o, 0) AS BIGINT) AS o FROM (SELECT DISTINCT x FROM c) dx CROSS JOIN (SELECT DISTINCT y FROM c) dy LEFT JOIN c USING (x, y)), t AS (SELECT x, y, o, CAST(SUM(o) OVER () AS BIGINT) AS n, CAST(SUM(o) OVER (PARTITION BY x) AS BIGINT) AS rx, CAST(SUM(o) OVER (PARTITION BY y) AS BIGINT) AS cy, CAST((SELECT COUNT(DISTINCT x) FROM c) AS BIGINT) AS nx, CAST((SELECT COUNT(DISTINCT y) FROM c) AS BIGINT) AS ny FROM sp), g AS (SELECT *, CAST(round(CAST(CAST(o AS DECIMAL(38,0)) * n - CAST(rx AS DECIMAL(38,0)) * cy AS DOUBLE) * CAST(CAST(o AS DECIMAL(38,0)) * n - CAST(rx AS DECIMAL(38,0)) * cy AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(rx AS DOUBLE) * CAST(cy AS DOUBLE)), 9) AS DECIMAL(18,9)) AS term FROM t), s AS (SELECT SUM(term) AS ts FROM g) SELECT x, y, o, rx, cy, round(CAST(s.ts AS DOUBLE), 6) AS chi2, round(sqrt(CAST(s.ts AS DOUBLE) / (CAST(n AS DOUBLE) * CAST(least(nx, ny) - 1 AS DOUBLE))), 6) AS cramers_v FROM g, s ORDER BY x, y""",
-    // exact integer moments; Z = (T*N)*sqrt(N)/sqrt(Var*N^3)
-    "q426_cochran_armitage" ->
-      """WITH b AS (SELECT least(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 5000000, 9) AS w, CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS s FROM orders), g AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS n_g, CAST(SUM(s) AS BIGINT) AS y_g FROM b GROUP BY 1), t AS (SELECT w, n_g, y_g, CAST(SUM(n_g) OVER () AS BIGINT) AS n, CAST(SUM(y_g) OVER () AS BIGINT) AS y, SUM(CAST(w AS DECIMAL(38,0)) * CAST(y_g AS DECIMAL(38,0))) OVER () AS swy, SUM(CAST(w AS DECIMAL(38,0)) * CAST(n_g AS DECIMAL(38,0))) OVER () AS swn, SUM(CAST(w AS DECIMAL(38,0)) * CAST(w AS DECIMAL(38,0)) * CAST(n_g AS DECIMAL(38,0))) OVER () AS swwn FROM g) SELECT w AS score, n_g, y_g, round(CAST(y_g AS DOUBLE) / CAST(n_g AS DOUBLE), 6) AS rate, round(CAST(CAST(n AS DECIMAL(38,0)) * swy - CAST(y AS DECIMAL(38,0)) * swn AS DOUBLE) * sqrt(CAST(n AS DOUBLE)) / sqrt(CAST(CAST(y AS DECIMAL(38,0)) * CAST(n - y AS DECIMAL(38,0)) AS DOUBLE) * CAST(CAST(n AS DECIMAL(38,0)) * swwn - swn * swn AS DOUBLE)), 6) AS z_trend FROM t ORDER BY score""",
-    // adjacency census -> thresholded undirected graph -> 3-iter PR
-    "q423_textrank" ->
-      s"""WITH wl AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\\s+') AS ws FROM documents), w AS (SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws, 1) AS pos FROM wl), aj AS (SELECT doc_id, lag(w) OVER (PARTITION BY doc_id ORDER BY pos) AS prev, w FROM w), und AS (SELECT least(prev, w) AS a, greatest(prev, w) AS b FROM aj WHERE prev IS NOT NULL AND prev <> w), cu AS (SELECT a, b FROM (SELECT a, b, COUNT(*) AS c FROM und GROUP BY 1, 2) WHERE c >= 3), edges AS (SELECT a AS src, b AS dst FROM cu UNION ALL SELECT b, a FROM cu), deg AS (SELECT src AS node, COUNT(*) AS deg FROM edges GROUP BY src), pr0 AS (SELECT node, deg, CAST(1.0 AS DOUBLE) AS pr FROM deg), it1 AS (SELECT e.dst AS node, SUM(CAST(p.pr / p.deg * 0.85 AS DECIMAL(28,9))) AS c FROM edges e JOIN pr0 p ON e.src = p.node GROUP BY e.dst), pr1 AS (SELECT d.node, d.deg, 0.15 + COALESCE(CAST(i.c AS DOUBLE), 0.0) AS pr FROM deg d LEFT JOIN it1 i ON d.node = i.node), it2 AS (SELECT e.dst AS node, SUM(CAST(p.pr / p.deg * 0.85 AS DECIMAL(28,9))) AS c FROM edges e JOIN pr1 p ON e.src = p.node GROUP BY e.dst), pr2 AS (SELECT d.node, d.deg, 0.15 + COALESCE(CAST(i.c AS DOUBLE), 0.0) AS pr FROM deg d LEFT JOIN it2 i ON d.node = i.node), it3 AS (SELECT e.dst AS node, SUM(CAST(p.pr / p.deg * 0.85 AS DECIMAL(28,9))) AS c FROM edges e JOIN pr2 p ON e.src = p.node GROUP BY e.dst), pr3 AS (SELECT d.node, d.deg, 0.15 + COALESCE(CAST(i.c AS DOUBLE), 0.0) AS pr FROM deg d LEFT JOIN it3 i ON d.node = i.node) SELECT node AS word, round(pr, 6) AS pr FROM pr3 ORDER BY pr DESC, word LIMIT 30""",
-    // the drained census store equals the batch split-conformal report
-    "q422_stream_conformal" ->
-      """WITH e AS (SELECT event_type AS g, CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y, CAST(concat('0x', substr(md5(concat('conf:', CAST(event_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 = 0 AS train FROM events), p AS (SELECT g, CAST(COUNT(*) AS BIGINT) AS n_train, CAST(round(CAST(SUM(y) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS DECIMAL(18,6)) AS pred FROM e WHERE train GROUP BY g), rs AS (SELECT e.g, p.n_train, p.pred, abs(CAST(e.y AS DECIMAL(18,6)) - p.pred) AS r, CAST(COUNT(*) AS BIGINT) AS t FROM e JOIN p ON e.g = p.g WHERE NOT train GROUP BY 1, 2, 3, 4), rk AS (SELECT *, CAST(SUM(t) OVER (PARTITION BY g ORDER BY r ROWS UNBOUNDED PRECEDING) AS BIGINT) AS c, CAST(SUM(t) OVER (PARTITION BY g) AS BIGINT) AS n_cal FROM rs), rr AS (SELECT *, least(n_cal, ((n_cal + 1) * 9000 + 9999) // 10000) AS rkk FROM rk) SELECT g, MAX(n_train) AS n_train, MAX(n_cal) AS n_cal, CAST(MAX(pred) AS DOUBLE) AS pred, CAST(MIN(CASE WHEN c >= rkk THEN r END) AS DOUBLE) AS qhat, CAST(MAX(pred) - MIN(CASE WHEN c >= rkk THEN r END) AS DOUBLE) AS lo, CAST(MAX(pred) + MIN(CASE WHEN c >= rkk THEN r END) AS DOUBLE) AS hi, round(CAST(MIN(CASE WHEN c >= rkk THEN c END) AS DOUBLE) / CAST(MAX(n_cal) AS DOUBLE), 6) AS coverage FROM rr GROUP BY g ORDER BY g""",
-    // pinned Welch z + A&S tail polynomial + step-up over the family
-    "q420_bh_fdr" ->
-      """WITH c AS (SELECT n.n_name, CAST(CAST(c_acctbal AS DECIMAL(12,2)) * 100 AS BIGINT) AS cents FROM customer JOIN nation n ON c_nationkey = n_nationkey), g AS (SELECT n_name, CAST(COUNT(*) AS BIGINT) AS na, SUM(CAST(cents AS DECIMAL(38,0))) AS sa, SUM(CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0))) AS saa FROM c GROUP BY 1), t AS (SELECT CAST(COUNT(*) AS BIGINT) AS nt, SUM(CAST(cents AS DECIMAL(38,0))) AS st, SUM(CAST(cents AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0))) AS stt FROM c), j AS (SELECT n_name, na, CAST(sa AS DOUBLE) AS saD, CAST(saa AS DOUBLE) AS saaD, nt - na AS nb, CAST(st - sa AS DOUBLE) AS sbD, CAST(stt - saa AS DOUBLE) AS sbbD FROM g, t), zc AS (SELECT n_name, (saD / CAST(na AS DOUBLE) - sbD / CAST(nb AS DOUBLE)) / sqrt(((CAST(na AS DOUBLE) * saaD - saD * saD) / (CAST(na AS DOUBLE) * (CAST(na AS DOUBLE) - 1.0))) / CAST(na AS DOUBLE) + ((CAST(nb AS DOUBLE) * sbbD - sbD * sbD) / (CAST(nb AS DOUBLE) * (CAST(nb AS DOUBLE) - 1.0))) / CAST(nb AS DOUBLE)) AS z FROM j), pt AS (SELECT n_name, z, 1.0 / (1.0 + 0.2316419 * abs(z)) AS tt FROM zc), pp AS (SELECT n_name, round(z, 6) AS zr, round(2.0 * 0.3989422804014327 * exp(-(abs(z) * abs(z)) / 2.0) * ((((1.330274429 * tt - 1.821255978) * tt + 1.781477937) * tt - 0.356563782) * tt + 0.319381530) * tt, 9) AS p FROM pt), bh AS (SELECT n_name, zr, p, CAST(ROW_NUMBER() OVER (ORDER BY p, n_name) AS BIGINT) AS r, CAST(COUNT(*) OVER () AS BIGINT) AS m FROM pp), km AS (SELECT MAX(CASE WHEN p * CAST(m AS DOUBLE) <= CAST(r AS DOUBLE) * 0.05 THEN r END) AS kmax FROM bh) SELECT n_name AS nation, zr AS z, p, r AS p_rank, round(CAST(r AS DOUBLE) * 0.05 / CAST(m AS DOUBLE), 9) AS bh_crit, (km.kmax IS NOT NULL AND r <= km.kmax) AS rejected FROM bh, km ORDER BY p_rank""",
-    // exact integer S and tie census; one pinned Z per key
-    "q421_mann_kendall" -> mkSql,
-    // the streamed daily-census store must equal the batch trend test
-    "q440_stream_mk" -> mkSql,
-    // the minimax replay at the PAVA domain: plan-independent optimum
-    "q419_isotonic_pava" ->
-      """WITH b AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) // 20000 AS x, CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS ys, CAST(COUNT(*) AS BIGINT) AS n FROM orders GROUP BY 1), rk AS (SELECT x, ys, n, ROW_NUMBER() OVER (ORDER BY x) AS rn, CAST(SUM(ys) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cp, CAST(SUM(n) OVER (ORDER BY x ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cc FROM b), pr AS (SELECT j.rn AS j, k.rn AS k, CAST(round(CAST(k.cp - (j.cp - j.ys) AS DOUBLE) / CAST(k.cc - (j.cc - j.n) AS DOUBLE), 12) AS DECIMAL(24,12)) AS avg FROM rk j JOIN rk k ON j.rn <= k.rn), m AS (SELECT j, k AS i, MIN(avg) OVER (PARTITION BY j ORDER BY k DESC ROWS UNBOUNDED PRECEDING) AS m FROM pr), f AS (SELECT i, MAX(m) AS f FROM m GROUP BY i) SELECT rk.x, rk.n, round(CAST(rk.ys AS DOUBLE) / CAST(rk.n AS DOUBLE), 6) AS raw_rate, round(CAST(f.f AS DOUBLE), 6) AS fitted_rate FROM rk JOIN f ON rk.rn = f.i ORDER BY rk.x""",
-    // the pinned Soundex walk as char unnest + LAG over the no-H/W seq
-    "q418_phonetic_block" ->
-      """WITH base AS (SELECT p_partkey, p_name FROM part), cl AS (SELECT p_partkey, upper(regexp_replace(p_name, '[^A-Za-z]', '', 'g')) AS l FROM base), m AS (SELECT p_partkey, generate_subscripts(string_split(l, ''), 1) AS i, CAST(substr('01230127022455012623017202', ascii(unnest(string_split(l, ''))) - 64, 1) AS INTEGER) AS code FROM cl WHERE length(l) > 0), noh AS (SELECT p_partkey, i, code, LAG(code) OVER (PARTITION BY p_partkey ORDER BY i) AS prev FROM m WHERE code <> 7), em AS (SELECT p_partkey, i, CAST(code AS VARCHAR) AS d, ROW_NUMBER() OVER (PARTITION BY p_partkey ORDER BY i) AS rn FROM noh WHERE i > 1 AND code BETWEEN 1 AND 6 AND (prev IS NULL OR prev <> code)), dig AS (SELECT p_partkey, string_agg(d, '' ORDER BY i) AS ds FROM em WHERE rn <= 3 GROUP BY 1), ky AS (SELECT b.p_partkey, b.p_name, CASE WHEN length(cl.l) = 0 THEN '' ELSE substr(cl.l, 1, 1) || rpad(COALESCE(dig.ds, ''), 3, '0') END AS key FROM base b JOIN cl ON b.p_partkey = cl.p_partkey LEFT JOIN dig ON b.p_partkey = dig.p_partkey) SELECT key, CAST(COUNT(*) AS BIGINT) AS n_parts, CAST(COUNT(DISTINCT p_name) AS BIGINT) AS n_names FROM ky GROUP BY key ORDER BY key""",
-    // the drained distinct-assignment store equals the batch gate
-    "q417_stream_srm" ->
-      """WITH u AS (SELECT DISTINCT user_id FROM events), a AS (SELECT CASE WHEN b < 2 THEN 'control' WHEN b < 3 THEN 't1' ELSE 't2' END AS arm FROM (SELECT CAST(concat('0x', substr(md5(concat('exp42:', CAST(user_id AS VARCHAR))), 1, 13)) AS BIGINT) % 4 AS b FROM u)), c0 AS (SELECT arm, CAST(COUNT(*) AS BIGINT) AS n_observed FROM a GROUP BY arm), wt AS (SELECT unnest(['control', 't1', 't2']) AS arm, unnest([2, 1, 1]) AS wgt), c AS (SELECT wt.arm, CAST(COALESCE(c0.n_observed, 0) AS BIGINT) AS n_observed, CAST(wt.wgt AS BIGINT) AS wgt FROM wt LEFT JOIN c0 ON wt.arm = c0.arm), t AS (SELECT CAST(SUM(n_observed) AS BIGINT) AS n FROM c), g AS (SELECT arm, n_observed, wgt, t.n, CAST(round(CAST(CAST(n_observed AS DECIMAL(38,0)) * 4 - CAST(t.n AS DECIMAL(38,0)) * CAST(wgt AS DECIMAL(38,0)) AS DOUBLE) * CAST(CAST(n_observed AS DECIMAL(38,0)) * 4 - CAST(t.n AS DECIMAL(38,0)) * CAST(wgt AS DECIMAL(38,0)) AS DOUBLE) / (CAST(t.n AS DOUBLE) * CAST(wgt AS DOUBLE) * 4.0), 9) AS DECIMAL(18,9)) AS term FROM c, t), s AS (SELECT SUM(term) AS ts FROM g) SELECT arm, n_observed, round(CAST(n AS DOUBLE) * CAST(wgt AS DOUBLE) / 4.0, 6) AS expected, round(CAST(s.ts AS DOUBLE), 6) AS chi2, CAST(s.ts AS DOUBLE) > 9.21034 AS srm FROM g, s ORDER BY arm""",
-    // exact type censuses; one pinned double probability per term
-    "q414_kneser_ney" ->
-      """WITH wl AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS ws FROM documents), w AS (SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws, 1) AS pos FROM wl), b AS (SELECT doc_id, coalesce(lag(w) OVER (PARTITION BY doc_id ORDER BY pos), '<s>') AS prev, w FROM w), cp AS (SELECT prev, w, CAST(COUNT(*) AS BIGINT) AS c_pair FROM b GROUP BY 1, 2), cf AS (SELECT prev, CAST(SUM(c_pair) AS BIGINT) AS c_first, CAST(COUNT(*) AS BIGINT) AS n_after FROM cp GROUP BY 1), ct AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS n_prec FROM cp GROUP BY 1), nt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_types FROM cp), t AS (SELECT doc_id, CAST(round(-ln((GREATEST(CAST(c_pair AS DOUBLE) - 0.75, 0.0) + 0.75 * CAST(n_after AS DOUBLE) * (CAST(n_prec AS DOUBLE) / CAST(n_types AS DOUBLE))) / CAST(c_first AS DOUBLE)), 9) AS DECIMAL(28,9)) AS nll FROM b JOIN cp USING (prev, w) JOIN cf USING (prev) JOIN ct USING (w) CROSS JOIN nt) SELECT doc_id, COUNT(*) AS n_trans, round(CAST(SUM(nll) AS DOUBLE) / COUNT(*), 6) AS avg_nll FROM t GROUP BY doc_id ORDER BY doc_id""",
-    // stride scheduling: vt = in-class rank × (LCM/weight), all integer;
-    // the 200-slot head replays as a plain ORDER BY ... LIMIT
-    "q225_mixture_schedule" ->
-      """WITH r AS (SELECT doc_id, lang, ROW_NUMBER() OVER (PARTITION BY lang ORDER BY doc_id) AS rnk FROM documents WHERE lang IN ('en', 'zh', 'de', 'es', 'fr')), v AS (SELECT doc_id, lang, CAST(rnk * CASE lang WHEN 'en' THEN 1 WHEN 'zh' THEN 2 WHEN 'de' THEN 3 WHEN 'es' THEN 3 WHEN 'fr' THEN 6 END AS BIGINT) AS vt FROM r), t AS (SELECT doc_id, lang, vt, ROW_NUMBER() OVER (ORDER BY vt, lang, doc_id) AS pos FROM v) SELECT CAST(pos AS BIGINT) AS pos, vt, lang, doc_id FROM t WHERE pos <= 200 ORDER BY pos""",
-    // the '<epoch>:<id>' md5 reseeds per epoch; shard = first 8 hex chars
-    // mod ranks (both engines: nonneg, so % == pmod)
-    "q230_epoch_order" ->
-      """WITH h AS (SELECT doc_id, md5(concat('2:', CAST(doc_id AS VARCHAR))) AS hx FROM documents), s AS (SELECT doc_id, hx, CAST(concat('0x', substr(hx, 1, 8)) AS BIGINT) % 4 AS shard FROM h), r AS (SELECT shard, doc_id, ROW_NUMBER() OVER (PARTITION BY shard ORDER BY hx, doc_id) AS pos FROM s) SELECT shard, CAST(pos AS BIGINT) AS pos, doc_id FROM r WHERE pos > 5 AND pos <= 15 ORDER BY shard, pos""",
-    // numbering is the pure sort position, so the distributed
-    // offset-and-local-rank construction replays as one window
-    "q232_global_ids" ->
-      """SELECT doc_id, n_chars, CAST(ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id) AS BIGINT) AS global_id FROM documents ORDER BY global_id""",
-    // the sorted order + window-w candidate rule replays declaratively;
-    // DuckDB's built-in Jaro-Winkler bit-matches the codegen expression
-    "q243_sorted_neighborhood" ->
-      """WITH d AS (SELECT doc_id, substring(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), 1, 60) AS skey FROM documents), r AS (SELECT doc_id, skey, ROW_NUMBER() OVER (ORDER BY skey, doc_id) AS rnk FROM d), p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.skey AS ka, b.skey AS kb FROM r a JOIN r b ON b.rnk > a.rnk AND b.rnk - a.rnk <= 4) SELECT id_a, id_b, round(jaro_winkler_similarity(ka, kb), 6) AS sim FROM p WHERE jaro_winkler_similarity(ka, kb) >= 0.9 ORDER BY id_a, id_b""",
-    // evolution is declarative: updated keys get the new balance and the
-    // new column's value, everyone else the old balance and NULL
-    "q244_merge_evolve" ->
-      """SELECT c_custkey, c_name, CASE WHEN c_custkey % 5 = 0 THEN c_acctbal + 100.0 ELSE c_acctbal END AS c_acctbal, CASE WHEN c_custkey % 5 = 0 THEN c_mktsegment ELSE NULL END AS segment FROM customer ORDER BY c_custkey""",
-    // exact decimal x integer-second mass, one final double division
-    "q245_twap" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec, value FROM events), l AS (SELECT user_id, sec, value, lead(sec) OVER (PARTITION BY user_id ORDER BY sec, event_id) AS nxt FROM e), d AS (SELECT user_id, CAST(value AS DECIMAL(18,2)) * (nxt - sec) AS wv, (nxt - sec) AS dur FROM l WHERE nxt IS NOT NULL), a AS (SELECT user_id, SUM(wv) AS swv, CAST(SUM(dur) AS BIGINT) AS span, COUNT(*) AS n_holds FROM d GROUP BY user_id) SELECT user_id, n_holds, round(CAST(swv AS DOUBLE) / CAST(span AS DOUBLE), 6) AS twap FROM a WHERE span > 0 ORDER BY user_id""",
-    // the three tagged ingests partition orders by key thirds, so the
-    // log-derived history replays as plain counts + running totals
-    "q246_lake_history" ->
-      """WITH t AS (SELECT CAST(COUNT(*) FILTER (o_orderkey % 3 = 0) AS BIGINT) AS c0, CAST(COUNT(*) FILTER (o_orderkey % 3 = 1) AS BIGINT) AS c1, CAST(COUNT(*) FILTER (o_orderkey % 3 = 2) AS BIGINT) AS c2 FROM orders) SELECT CAST(1 AS BIGINT) AS version, 'ingest-0' AS tag, c0 AS rows_added, c0 AS total_rows FROM t UNION ALL SELECT 2, 'ingest-1', c1, c0 + c1 FROM t UNION ALL SELECT 3, 'ingest-2', c2, c0 + c1 + c2 FROM t ORDER BY version""",
-    "q247_rfm" ->
-      """WITH per AS (SELECT o_custkey AS custkey, MAX(epoch_ns(o_orderdate) // 1000000000 // 86400) AS last_day, COUNT(*) AS freq, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS monetary FROM orders GROUP BY 1), t AS (SELECT *, CAST(ntile(4) OVER (ORDER BY last_day DESC, custkey) AS BIGINT) AS r, CAST(ntile(4) OVER (ORDER BY freq DESC, custkey) AS BIGINT) AS f, CAST(ntile(4) OVER (ORDER BY monetary DESC, custkey) AS BIGINT) AS m FROM per) SELECT custkey, last_day, freq, monetary, r, f, m, r * 100 + f * 10 + m AS rfm FROM t ORDER BY custkey""",
-    "q248_cusum" ->
-      """WITH h AS (SELECT event_type, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS v FROM events GROUP BY 1, 2), s AS (SELECT event_type, hid, v, COUNT(*) OVER (PARTITION BY event_type) AS m, SUM(v) OVER (PARTITION BY event_type) AS t FROM h), d AS (SELECT event_type, hid, m, m * v - t - m * 10000 AS d FROM s), p AS (SELECT event_type, hid, m, SUM(d) OVER w AS p FROM d WINDOW w AS (PARTITION BY event_type ORDER BY hid ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), c AS (SELECT event_type, hid, m, p - LEAST(0, MIN(p) OVER (PARTITION BY event_type ORDER BY hid ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) AS s FROM p) SELECT event_type, hid, round(CAST(s AS DOUBLE) / (CAST(m AS DOUBLE) * 100.0), 6) AS cusum, CAST(s > m * 200000 AS INTEGER) AS shifted FROM c ORDER BY event_type, hid""",
-    "q249_kmv_distinct" ->
-      """WITH h AS (SELECT DISTINCT event_type AS g, CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 13)) AS BIGINT) AS h FROM events), r AS (SELECT g, h, ROW_NUMBER() OVER (PARTITION BY g ORDER BY h) AS rn FROM h), mins AS (SELECT g, h, rn FROM r WHERE rn <= 64), u AS (SELECT h, ROW_NUMBER() OVER (ORDER BY h) AS rn FROM (SELECT DISTINCT h FROM mins)), uk AS (SELECT '__union__' AS g, h, rn FROM u WHERE rn <= 64), allm AS (SELECT * FROM mins UNION ALL SELECT * FROM uk), e AS (SELECT g, COUNT(*) AS nk, MAX(CASE WHEN rn = 64 THEN h END) AS hk FROM allm GROUP BY g) SELECT g, round(CASE WHEN nk < 64 THEN CAST(nk AS DOUBLE) ELSE CAST(63 AS DOUBLE) * CAST(4503599627370496 AS DOUBLE) / CAST(hk AS DOUBLE) END, 4) AS est FROM e ORDER BY g""",
-    "q250_skyline" ->
-      """WITH o AS (SELECT c_mktsegment AS seg, o_orderkey, epoch_ns(o_orderdate) // 1000000000 // 86400 AS d, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents FROM orders JOIN customer ON o_custkey = c_custkey) SELECT seg, o_orderkey, d, cents FROM o q WHERE NOT EXISTS (SELECT 1 FROM o p WHERE p.seg = q.seg AND p.d <= q.d AND p.cents <= q.cents AND (p.d < q.d OR p.cents < q.cents)) ORDER BY seg, d, cents, o_orderkey""",
-    "q251_systematic_pps" ->
-      """WITH d AS (SELECT doc_id, lang, n_chars, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents), c AS (SELECT doc_id, lang, n_chars, SUM(n_chars) OVER (PARTITION BY lang ORDER BY hx, doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cumw, SUM(n_chars) OVER (PARTITION BY lang) AS tot FROM d) SELECT doc_id, lang, n_chars, CAST((cumw * 10) // tot - ((cumw - n_chars) * 10) // tot AS BIGINT) AS n_crossings FROM c WHERE (cumw * 10) // tot > ((cumw - n_chars) * 10) // tot ORDER BY lang, doc_id""",
-    "q252_accent_fold" ->
-      """WITH a AS (SELECT doc_id, text, translate(text, 'aeiou', 'áéíóú') AS acc FROM documents) SELECT doc_id, md5(acc) AS accented_md5, md5(strip_accents(acc)) AS folded_md5, CAST(strip_accents(acc) = text AS INTEGER) AS roundtrip, CAST(length(text) - length(translate(text, 'aeiou', '')) AS BIGINT) AS n_folded FROM a ORDER BY doc_id""",
-    "q253_ewma" ->
-      """WITH h AS (SELECT user_id, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS DOUBLE) AS v FROM events GROUP BY 1, 2), l AS (SELECT user_id, COUNT(*) AS n, list(v ORDER BY hid) AS vs FROM h GROUP BY 1) SELECT user_id, n, round(list_reduce(vs, (acc, x) -> 0.25 * x + 0.75 * acc), 6) AS ewma FROM l ORDER BY user_id""",
-    // row-order lead (not time-offset) on both engines; exact DECIMAL(38,0)
-    // sums feed the identically-ordered closed-form Pearson
-    "q255_autocorr" ->
-      """WITH h AS (SELECT event_type, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS v FROM events GROUP BY 1, 2), l AS (SELECT event_type, lag, v AS x, w FROM (SELECT event_type, hid, v, lead(v, 1) OVER (PARTITION BY event_type ORDER BY hid) AS w, CAST(1 AS BIGINT) AS lag FROM h UNION ALL SELECT event_type, hid, v, lead(v, 24) OVER (PARTITION BY event_type ORDER BY hid) AS w, CAST(24 AS BIGINT) AS lag FROM h) WHERE w IS NOT NULL), a AS (SELECT event_type, lag, COUNT(*) AS n, SUM(CAST(x AS DECIMAL(38,0))) AS sx, SUM(CAST(w AS DECIMAL(38,0))) AS sy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(x AS DECIMAL(38,0))) AS sxx, SUM(CAST(w AS DECIMAL(38,0)) * CAST(w AS DECIMAL(38,0))) AS syy, SUM(CAST(x AS DECIMAL(38,0)) * CAST(w AS DECIMAL(38,0))) AS sxy FROM l GROUP BY 1, 2) SELECT event_type, lag, n, round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) AS acf FROM a WHERE n >= 3 ORDER BY event_type, lag""",
-    // per-cell MI terms quantized to DECIMAL(18,9) before the
-    // order-independent total; ln over exact integer operands both sides
-    // stream-committed then TTL-expired = the plain sec-filtered
-    // aggregate; the tertile cutoff replays as integer arithmetic
-    "q267_stream_retention" ->
-      s"""WITH e AS (SELECT event_type, value, epoch_ns(ts) // 1000000000 AS sec FROM events), b AS (SELECT MIN(sec) AS lo, MAX(sec) AS hi FROM e) SELECT event_type, COUNT(*) AS n, $SUMV AS total_value FROM e, b WHERE sec > lo + (hi - lo) // 3 GROUP BY 1 ORDER BY 1""",
-    // the Laplace draw replays hash-for-hash: same md5-derived 52-bit
-    // uniform, same inverse-CDF expression, same operation order
-    "q268_dp_counts" ->
-      """WITH g AS (SELECT event_type, COUNT(*) AS n FROM events GROUP BY 1), u AS (SELECT event_type, n, CAST(CAST(concat('0x', substr(md5(concat('dp1', event_type)), 1, 13)) AS BIGINT) AS DOUBLE) / 4503599627370496.0 - 0.5 AS c FROM g) SELECT event_type, n, round(CAST(n AS DOUBLE) + -(1.0) * sign(c) * ln(1 - 2 * abs(c)), 6) AS noisy_n FROM u ORDER BY event_type""",
-    // the bucketed overlap join must equal the plain inequality join; the
-    // canonical-bucket filter makes each pair count exactly once
-    "q269_interval_join" ->
-      """WITH e AS (SELECT event_id, user_id, event_type, epoch_ns(ts) // 1000000000 AS sec FROM events), spans AS (SELECT user_id, sec // 86400 AS day, MIN(sec) AS span_lo, MAX(sec) AS span_hi FROM e GROUP BY 1, 2), w AS (SELECT event_id AS win_id, sec - 900 AS win_lo, sec + 900 AS win_hi FROM e WHERE event_type = 'error' AND event_id % 197 = 0) SELECT s.user_id, s.day, s.span_lo, s.span_hi, COUNT(*) AS n_windows FROM spans s JOIN w ON s.span_lo <= w.win_hi AND w.win_lo <= s.span_hi GROUP BY 1, 2, 3, 4 ORDER BY 1, 2""",
-    // four Bellman-Ford relaxation rounds unrolled as CTEs — identical
-    // integer min-plus arithmetic on both engines
-    "q270_shortest_path" ->
-      """WITH pairs AS (SELECT o_custkey AS cust, l_suppkey AS supp, MIN(CAST(floor(l_quantity) AS BIGINT)) AS w FROM lineitem JOIN orders ON l_orderkey = o_orderkey GROUP BY 1, 2), ed AS (SELECT cust AS src, -supp AS dst, w FROM pairs UNION ALL SELECT -supp, cust, w FROM pairs), d0 AS (SELECT c_custkey AS node, CAST(0 AS BIGINT) AS dist FROM customer WHERE c_nationkey = 0), d1 AS (SELECT node, MIN(dist) AS dist FROM (SELECT node, dist FROM d0 UNION ALL SELECT e.dst, d.dist + e.w FROM d0 d JOIN ed e ON e.src = d.node) GROUP BY 1), d2 AS (SELECT node, MIN(dist) AS dist FROM (SELECT node, dist FROM d1 UNION ALL SELECT e.dst, d.dist + e.w FROM d1 d JOIN ed e ON e.src = d.node) GROUP BY 1), d3 AS (SELECT node, MIN(dist) AS dist FROM (SELECT node, dist FROM d2 UNION ALL SELECT e.dst, d.dist + e.w FROM d2 d JOIN ed e ON e.src = d.node) GROUP BY 1), d4 AS (SELECT node, MIN(dist) AS dist FROM (SELECT node, dist FROM d3 UNION ALL SELECT e.dst, d.dist + e.w FROM d3 d JOIN ed e ON e.src = d.node) GROUP BY 1) SELECT node, dist FROM d4 ORDER BY node""",
-    // point lookups through the refreshed index: doubled %50 prices plus
-    // the merged-in synthetic key — derived directly, not replayed
-    "q289_bloom_refresh" ->
-      """SELECT o_orderkey, o_custkey, o_orderstatus, CAST(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 2 AS DECIMAL(18,2)) AS DOUBLE) AS price FROM orders WHERE o_orderkey IN (150, 300) UNION ALL SELECT o_orderkey, o_custkey, o_orderstatus, CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) FROM orders WHERE o_orderkey = 301 UNION ALL SELECT CAST((MAX(o_orderkey) // 1000000 + 1) * 1000000 + 3 AS BIGINT), 0, 'N', 1.0 FROM orders ORDER BY o_orderkey""",
-    // the expected conflict report derived independently from the
-    // injected divergence rules: %31 price drift, %37 status corruption
-    // (only where replica 3 exists), %41 outage
-    "q290_majority_reconcile" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_orderstatus AS st, CAST(o_totalprice AS DECIMAL(18,2)) AS price FROM orders) SELECT k AS o_orderkey, CAST(CASE WHEN k % 41 = 0 THEN 2 ELSE 3 END AS BIGINT) AS n_present, st AS o_orderstatus, CAST(price AS DOUBLE) AS price, CAST((CASE WHEN k % 31 = 0 THEN 1 ELSE 0 END) + (CASE WHEN k % 37 = 0 AND k % 41 <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_conflict_fields, CAST(0 AS BIGINT) AS n_unresolved FROM o WHERE k % 31 = 0 OR (k % 37 = 0 AND k % 41 <> 0) OR k % 41 = 0 ORDER BY k""",
-    // the Benford expectations are the SAME pinned 12-decimal literals on
-    // both engines; leading digit from the integer part only; χ² terms
-    // rounded then decimal-summed (order-independent)
-    "q291_benford" ->
-      """WITH obs AS (SELECT CAST(substr(CAST(CAST(floor(o_totalprice) AS BIGINT) AS VARCHAR), 1, 1) AS INT) AS digit, COUNT(*) AS n FROM orders WHERE o_totalprice >= 1 GROUP BY 1), sp AS (SELECT * FROM (VALUES (1, 0.301029995664), (2, 0.176091259056), (3, 0.124938736608), (4, 0.096910013008), (5, 0.079181246048), (6, 0.066946789631), (7, 0.057991946978), (8, 0.051152522447), (9, 0.045757490561)) AS t(digit, expected_p)), j AS (SELECT sp.digit, COALESCE(obs.n, 0) AS n, sp.expected_p FROM sp LEFT JOIN obs USING (digit)), t2 AS (SELECT digit, n, expected_p, expected_p * CAST(SUM(n) OVER () AS DOUBLE) AS expected_n FROM j), d AS (SELECT digit, n, expected_p, expected_n, CAST(round((CAST(n AS DOUBLE) - expected_n) * (CAST(n AS DOUBLE) - expected_n) / expected_n, 6) AS DECIMAL(18,6)) AS chi2_term FROM t2) SELECT digit, n, expected_p, round(expected_n, 6) AS expected_n, CAST(chi2_term AS DOUBLE) AS chi2_term, CAST(SUM(chi2_term) OVER () AS DOUBLE) AS chi2_total FROM d ORDER BY digit""",
-    // one melted union then one (pair, value) aggregation — identical
-    // string-casts of the probed columns on both engines
-    "q292_fd_discovery" ->
-      """WITH m AS (SELECT 'c_custkey' AS lhs, 'c_mktsegment' AS rhs, CAST(c_custkey AS VARCHAR) AS a, c_mktsegment AS b FROM customer UNION ALL SELECT 'c_nationkey', 'c_mktsegment', CAST(c_nationkey AS VARCHAR), c_mktsegment FROM customer UNION ALL SELECT 'c_mktsegment', 'c_nationkey', c_mktsegment, CAST(c_nationkey AS VARCHAR) FROM customer UNION ALL SELECT 'c_name', 'c_custkey', c_name, CAST(c_custkey AS VARCHAR) FROM customer), g AS (SELECT lhs, rhs, a, COUNT(DISTINCT b) AS ndv_b FROM m GROUP BY 1, 2, 3) SELECT lhs, rhs, COUNT(*) AS n_groups, CAST(SUM(CASE WHEN ndv_b > 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_violating, MAX(ndv_b) AS max_multiplicity, round(CAST(SUM(CASE WHEN ndv_b > 1 THEN 1 ELSE 0 END) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS violation_rate, SUM(CASE WHEN ndv_b > 1 THEN 1 ELSE 0 END) = 0 AS holds FROM g GROUP BY 1, 2 ORDER BY 1, 2""",
-    // exact integer window sums, closed-form slope/intercept in the same
-    // pinned double op order; NULL before a full 7-row window
-    "q293_rolling_ols" ->
-      """WITH d AS (SELECT event_type, (epoch_ns(ts) // 1000000000) // 86400 AS day, COUNT(*) AS y FROM events GROUP BY 1, 2), w AS (SELECT event_type, day AS x, y, COUNT(*) OVER win AS n, SUM(day) OVER win AS sx, SUM(y) OVER win AS sy, SUM(day * y) OVER win AS sxy, SUM(day * day) OVER win AS sxx FROM d WINDOW win AS (PARTITION BY event_type ORDER BY day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)), r AS (SELECT event_type, x, y, n, sx, sy, CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS den, (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS slope_raw FROM w) SELECT event_type, x, y, CASE WHEN n = 7 AND den <> 0 THEN round(slope_raw, 6) END AS slope, CASE WHEN n = 7 AND den <> 0 THEN round((CAST(sy AS DOUBLE) - slope_raw * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 6) END AS intercept FROM r ORDER BY event_type, x""",
-    // basket-keyed pair join, brand-domain-sized rule table; identical
-    // fixed-order support/confidence/lift arithmetic
-    "q294_assoc_rules" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, p_brand AS it FROM lineitem JOIN part ON l_partkey = p_partkey), s AS (SELECT it, COUNT(*) AS n_i FROM b GROUP BY 1), t AS (SELECT COUNT(DISTINCT bk) AS n_baskets FROM b), p AS (SELECT l.it AS ia, r.it AS ib, COUNT(*) AS n_ab FROM b l JOIN b r ON l.bk = r.bk AND l.it < r.it GROUP BY 1, 2), r2 AS (SELECT ia AS ante, ib AS cons, n_ab FROM p UNION ALL SELECT ib, ia, n_ab FROM p) SELECT ante, cons, n_ab, sa.n_i AS n_ante, sc.n_i AS n_cons, round(CAST(n_ab AS DOUBLE) / CAST(n_baskets AS DOUBLE), 6) AS support, round(CAST(n_ab AS DOUBLE) / CAST(sa.n_i AS DOUBLE), 6) AS confidence, round(CAST(n_ab AS DOUBLE) * CAST(n_baskets AS DOUBLE) / (CAST(sa.n_i AS DOUBLE) * CAST(sc.n_i AS DOUBLE)), 6) AS lift FROM r2 JOIN s sa ON ante = sa.it JOIN s sc ON cons = sc.it CROSS JOIN t ORDER BY ante, cons""",
-    // identical fixed-order bin arithmetic (the q109 pattern); ECDF diff
-    // rounded to 1e-9 then maximized over the bins-sized aggregate
-    "q295_ks_binned" ->
-      """WITH o AS (SELECT o_totalprice AS v, o_orderpriority = '1-URGENT' AS isa FROM orders WHERE o_orderpriority IN ('1-URGENT', '5-LOW')), mm AS (SELECT MIN(v) AS mn, MAX(v) AS mx FROM o), bb AS (SELECT LEAST(CAST(floor((v - mn) * 40.0 / (mx - mn)) AS BIGINT), 39) AS bin, isa FROM o, mm), c AS (SELECT bin, CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS n_a, CAST(SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS BIGINT) AS n_b FROM bb GROUP BY 1), w AS (SELECT bin, n_a, n_b, SUM(n_a) OVER cum AS cum_a, SUM(n_b) OVER cum AS cum_b, SUM(n_a) OVER () AS t_a, SUM(n_b) OVER () AS t_b FROM c WINDOW cum AS (ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), f AS (SELECT bin, n_a, n_b, CAST(cum_a AS DOUBLE) / CAST(t_a AS DOUBLE) AS f_a, CAST(cum_b AS DOUBLE) / CAST(t_b AS DOUBLE) AS f_b FROM w), d AS (SELECT bin, n_a, n_b, f_a, f_b, round(abs(f_a - f_b), 9) AS d_term FROM f) SELECT bin, n_a, n_b, round(f_a, 9) AS f_a, round(f_b, 9) AS f_b, d_term, MAX(d_term) OVER () AS d_stat FROM d ORDER BY bin""",
-    // both engines rank on the 1e-6-rounded cosine with the neighbor-id
-    // tie-break — identical top-3 per item
-    "q296_item_neighbors" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, p_brand AS it FROM lineitem JOIN part ON l_partkey = p_partkey), s AS (SELECT it, COUNT(*) AS n_i FROM b GROUP BY 1), p AS (SELECT l.it AS ia, r.it AS ib, COUNT(*) AS n_ab FROM b l JOIN b r ON l.bk = r.bk AND l.it < r.it GROUP BY 1, 2), bo AS (SELECT ia AS item, ib AS neighbor, n_ab FROM p UNION ALL SELECT ib, ia, n_ab FROM p), sc AS (SELECT item, neighbor, n_ab, round(CAST(n_ab AS DOUBLE) / sqrt(CAST(si.n_i AS DOUBLE) * CAST(sn.n_i AS DOUBLE)), 6) AS cosine FROM bo JOIN s si ON item = si.it JOIN s sn ON neighbor = sn.it), r AS (SELECT item, neighbor, n_ab, cosine, ROW_NUMBER() OVER (PARTITION BY item ORDER BY cosine DESC, neighbor ASC) AS rank FROM sc) SELECT item, CAST(rank AS BIGINT) AS rank, neighbor, n_ab, cosine FROM r WHERE rank <= 3 ORDER BY item, rank""",
-    // the Poisson(1) weights replay draw-for-draw: the same xorshift mix
-    // through the HUGEINT macros, the same pinned CDF literals; resample
-    // sums in DECIMAL, discrete-rank CI
-    "q297_bootstrap_ci" ->
-      s"""$HASH_MACROS; WITH base AS (SELECT c_mktsegment AS seg, o_orderkey AS id, o_totalprice AS v FROM orders JOIN customer ON o_custkey = c_custkey), reps AS (SELECT seg, id, v, unnest(range(0, 40)) AS rep FROM base), u AS (SELECT seg, rep, v, CAST(xstep(xstep(xstep(xstep(xshash('bs1'), CAST(id AS HUGEINT)), CAST(rep AS HUGEINT)), CAST('11400714819323198485' AS HUGEINT)), CAST('11400714819323198485' AS HUGEINT)) >> 12 AS DOUBLE) / 4503599627370496.0 AS uu FROM reps), w AS (SELECT seg, rep, v, CASE WHEN uu < 0.367879441171 THEN 0 WHEN uu < 0.735758882343 THEN 1 WHEN uu < 0.919698602929 THEN 2 WHEN uu < 0.981011843124 THEN 3 WHEN uu < 0.996340153173 THEN 4 ELSE 5 END AS w FROM u), rm AS (SELECT seg, rep, CAST(SUM(w) AS BIGINT) AS n_rep, SUM(CAST(w * v AS DECIMAL(18,2))) AS s_rep FROM w GROUP BY 1, 2), rm2 AS (SELECT seg, rep, n_rep, CAST(s_rep AS DOUBLE) / CAST(n_rep AS DOUBLE) AS mean_rep FROM rm WHERE n_rep > 0), rk AS (SELECT seg, rep, mean_rep, ROW_NUMBER() OVER (PARTITION BY seg ORDER BY mean_rep, rep) AS rk, COUNT(*) OVER (PARTITION BY seg) AS nr FROM rm2), ci AS (SELECT seg, MAX(nr) AS n_resamples, MAX(CASE WHEN rk = 4 THEN mean_rep END) AS ci_lo, MAX(CASE WHEN rk = 36 THEN mean_rep END) AS ci_hi FROM rk GROUP BY 1), pt AS (SELECT seg, COUNT(*) AS n, CAST(SUM(CAST(v AS DECIMAL(18,2))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE) AS mean FROM base GROUP BY 1) SELECT pt.seg, pt.n, round(pt.mean, 6) AS mean, ci.n_resamples, round(ci.ci_lo, 6) AS ci_lo, round(ci.ci_hi, 6) AS ci_hi FROM pt JOIN ci USING (seg) ORDER BY seg""",
-    // the expected edge list derived BY HAND from the query's shape —
-    // not replayed; literals/count(*) report the (NULL, NULL) row
-    "q298_column_lineage" ->
-      """SELECT * FROM (VALUES ('c_mktsegment', 'customer', 'c_mktsegment'), ('n_orders', CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)), ('revenue', 'orders', 'o_totalprice'), ('revenue_share', 'orders', 'o_totalprice'), ('tag', CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR))) AS t(out_col, src_table, src_col) ORDER BY out_col, src_table, src_col""",
-    // every src→dst path enumerated by the recursive CTE, quantities
-    // multiplied along the path and summed per pair — exact integers
-    "q299_bom_explosion" ->
-      """WITH RECURSIVE nodes AS (SELECT p_partkey AS k FROM part WHERE p_partkey BETWEEN 1 AND 600), e AS (SELECT a.k AS src, b.k AS dst, 2 AS qty FROM nodes a JOIN nodes b ON b.k = a.k * 2 UNION ALL SELECT a.k, b.k, 3 FROM nodes a JOIN nodes b ON b.k = a.k * 3), paths AS (SELECT src, dst, CAST(qty AS BIGINT) AS q, 1 AS len FROM e UNION ALL SELECT p.src, e.dst, p.q * e.qty, p.len + 1 FROM paths p JOIN e ON e.src = p.dst WHERE p.len < 10) SELECT src, dst, CAST(SUM(q) AS BIGINT) AS total_qty FROM paths GROUP BY 1, 2 ORDER BY 1, 2""",
-    // the for-all via NOT EXISTS double negation — same probe set (2
-    // smallest part keys), same distinct pair relation
-    "q310_rel_division" ->
-      """WITH probe AS (SELECT p_partkey FROM part ORDER BY p_partkey LIMIT 2), sp AS (SELECT DISTINCT l_suppkey, l_partkey FROM lineitem), ok AS (SELECT s_suppkey FROM supplier s WHERE NOT EXISTS (SELECT 1 FROM probe p WHERE NOT EXISTS (SELECT 1 FROM sp WHERE sp.l_suppkey = s.s_suppkey AND sp.l_partkey = p.p_partkey))), q AS (SELECT l_suppkey, COUNT(*) AS n_lines, CAST(SUM(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS total_qty FROM lineitem JOIN probe ON l_partkey = p_partkey GROUP BY 1) SELECT ok.s_suppkey, q.n_lines, q.total_qty FROM ok JOIN q ON ok.s_suppkey = q.l_suppkey ORDER BY 1""",
-    // window sums in DECIMAL over the nations aggregate — exact at any
-    // order; identical ratio arithmetic
-    "q311_share_of_parent" ->
-      """WITH rev AS (SELECT r_name AS region, n_name AS nation, SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS rev_d FROM orders JOIN customer ON o_custkey = c_custkey JOIN nation ON c_nationkey = n_nationkey JOIN region ON n_regionkey = r_regionkey GROUP BY 1, 2), w AS (SELECT region, nation, rev_d, SUM(rev_d) OVER (PARTITION BY region) AS region_d, SUM(rev_d) OVER () AS total_d FROM rev) SELECT region, nation, CAST(rev_d AS DOUBLE) AS revenue, round(CAST(rev_d AS DOUBLE) / CAST(region_d AS DOUBLE), 6) AS share_in_region, round(CAST(region_d AS DOUBLE) / CAST(total_d AS DOUBLE), 6) AS region_share_of_total FROM w ORDER BY region, nation""",
-    // the expected edge list derived by hand from the SQL text's shape;
-    // view-name boundaries, literals/count(*) report (NULL, NULL)
-    "q307_lineage_sql" ->
-      """SELECT * FROM (VALUES ('segment', 'customer_v', 'c_mktsegment'), ('n_orders', CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)), ('revenue', 'orders_v', 'o_totalprice'), ('segment_uc', 'customer_v', 'c_mktsegment'), ('tag', CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR))) AS t(out_col, src_table, src_col) ORDER BY out_col, src_table, src_col""",
-    // the v2-state profile must equal plain batch sessionization: first
-    // event or gap > 1800 s opens a session, counters are lifetime totals
-    "q308_tws_profile" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_ns(ts) // 1000000000 AS sec FROM events), g AS (SELECT user_id, CASE WHEN lag(sec) OVER w IS NULL OR sec - lag(sec) OVER w > 1800 THEN 1 ELSE 0 END AS ns FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)) SELECT user_id, COUNT(*) AS n_events, CAST(SUM(ns) AS BIGINT) AS n_sessions FROM g GROUP BY 1 ORDER BY 1""",
-    // timer-finalized sessions must equal batch gap sessionization
-    "q312_tws_timers" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), s AS (SELECT user_id, event_id, sec, CASE WHEN lag(sec) OVER w IS NULL OR sec - lag(sec) OVER w > 1800 THEN 1 ELSE 0 END AS new_s FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)), t AS (SELECT user_id, sec, CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY sec, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sid FROM s) SELECT user_id, MIN(sec) AS start_sec, MAX(sec) AS end_sec, COUNT(*) AS n_events FROM t GROUP BY user_id, sid ORDER BY user_id, start_sec""",
-    // TTL'd first-seen: exact first event per (user, event_type)
-    "q313_tws_ttl" ->
-      """WITH e AS (SELECT user_id, event_type, event_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), r AS (SELECT user_id, event_type, sec, event_id, ROW_NUMBER() OVER (PARTITION BY user_id, event_type ORDER BY sec, event_id) AS rn FROM e) SELECT user_id, event_type, sec AS first_sec, event_id AS first_event_id FROM r WHERE rn = 1 ORDER BY user_id, event_type""",
-    // seeded profile must reconstruct the FULL-history aggregate
-    "q314_tws_initial" ->
-      """SELECT user_id, COUNT(*) AS n_events, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS sum_cents FROM events GROUP BY 1 ORDER BY 1""",
-    // the triple-smoothing recursion replays as a recursive CTE carrying
-    // the 24 seasonal slots as a LIST, level recomputed inside trend and
-    // seasonal on both engines (the q261 discipline, scaled up)
-    "q315_holt_winters" ->
-      """WITH RECURSIVE h AS (SELECT event_type, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS DOUBLE) AS v FROM events GROUP BY 1, 2), o AS (SELECT event_type, v, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY hid) AS rn FROM h), nn AS (SELECT event_type, COUNT(*) AS n FROM o GROUP BY 1), rec AS (SELECT event_type, CAST(1 AS BIGINT) AS rn, v AS l, CAST(0 AS DOUBLE) AS b, list_transform(range(24), i -> CAST(0 AS DOUBLE)) AS s FROM o WHERE rn = 1 UNION ALL SELECT r.event_type, r.rn + 1, 0.5 * (x.v - r.s[CAST(r.rn % 24 AS INTEGER) + 1]) + 0.5 * (r.l + r.b) AS l, 0.25 * ((0.5 * (x.v - r.s[CAST(r.rn % 24 AS INTEGER) + 1]) + 0.5 * (r.l + r.b)) - r.l) + 0.75 * r.b AS b, r.s[1:CAST(r.rn % 24 AS INTEGER)] || [0.25 * (x.v - (0.5 * (x.v - r.s[CAST(r.rn % 24 AS INTEGER) + 1]) + 0.5 * (r.l + r.b))) + 0.75 * r.s[CAST(r.rn % 24 AS INTEGER) + 1]] || r.s[CAST(r.rn % 24 AS INTEGER) + 2:24] AS s FROM rec r JOIN o x ON x.event_type = r.event_type AND x.rn = r.rn + 1) SELECT f.event_type, nn.n, round(f.l, 6) AS level, round(f.b, 6) AS trend, round(f.l + f.b + f.s[CAST(nn.n % 24 AS INTEGER) + 1], 6) AS forecast FROM rec f JOIN nn ON nn.event_type = f.event_type AND f.rn = nn.n WHERE nn.n >= 2 ORDER BY f.event_type""",
-    // the bottom-k-by-hash sample replays hash-for-hash: per-day bottom
-    // 256, global re-take, sorted-array quantile pick
-    "q316_quantile_sketch" ->
-      """WITH e AS (SELECT strftime(ts, '%Y-%m-%d') AS seg, event_id AS id, CAST(value AS DOUBLE) AS v, CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR)), 1, 13)) AS BIGINT) AS h FROM events), sk AS (SELECT seg, h, id, v FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY seg ORDER BY h, id) AS rn FROM e) WHERE rn <= 256), m AS (SELECT v FROM (SELECT v, ROW_NUMBER() OVER (ORDER BY h, id) AS grn FROM sk) WHERE grn <= 256), arr AS (SELECT list_sort(list(v)) AS vals, COUNT(*) AS kk FROM m), tot AS (SELECT COUNT(*) AS n_total FROM e), spine AS (SELECT * FROM (VALUES (0.5), (0.9), (0.99)) AS t(q)) SELECT q AS quantile, vals[CAST(GREATEST(1, CEIL(q * kk)) AS INTEGER)] AS est, kk AS sample_k, n_total FROM spine, arr, tot ORDER BY quantile""",
-    // hand-derived lineage edges over the lake-backed join: count(*) has
-    // no leaf source by design
-    "q317_lineage_lake" ->
-      """SELECT * FROM (VALUES ('segment', 'customer_pq', 'c_mktsegment'), ('n_orders', CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)), ('revenue', 'orders_lake', 'o_totalprice'), ('segment_uc', 'customer_pq', 'c_mktsegment')) AS t(out_col, src_table, src_col) ORDER BY out_col, src_table, src_col""",
-    // the order statistic at rank ceil(q*N) under the total (v, id) order
-    "q318_exact_percentile" ->
-      """WITH e AS (SELECT CAST(value AS DOUBLE) AS v, event_id AS id FROM events), r AS (SELECT v, ROW_NUMBER() OVER (ORDER BY v, id) AS rnk FROM e), n AS (SELECT COUNT(*) AS n FROM e), spine AS (SELECT * FROM (VALUES (0.5), (0.9), (0.99)) AS t(q)) SELECT q AS quantile, v AS exact_value, n.n AS n_total FROM spine, n, r WHERE r.rnk = CAST(GREATEST(1, CEIL(q * n.n)) AS BIGINT) ORDER BY quantile""",
-    // doubled average ranks (2c - t + 1) and the tie term in exact
-    // decimals; mu/sigma/z in the engine's pinned double order
-    "q319_mann_whitney" ->
-      """WITH e AS (SELECT CAST(value AS DOUBLE) AS v, event_type = 'purchase' AS isa FROM events WHERE event_type IN ('purchase', 'click')), bv AS (SELECT v, SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS ta, SUM(CASE WHEN isa THEN 0 ELSE 1 END) AS tb FROM e GROUP BY v), rk AS (SELECT ta, tb, ta + tb AS t, SUM(ta + tb) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c FROM bv), ag AS (SELECT CAST(SUM(ta) AS BIGINT) AS na, CAST(SUM(tb) AS BIGINT) AS nb, SUM(CAST(ta AS DECIMAL(38,0)) * CAST(2 * c - t + 1 AS DECIMAL(38,0))) AS ra2, SUM(CAST(t AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0)) * CAST(t AS DECIMAL(38,0)) - CAST(t AS DECIMAL(38,0))) AS ties FROM rk) SELECT na AS n_a, nb AS n_b, CAST(ra2 - CAST(na AS DECIMAL(38,0)) * CAST(na + 1 AS DECIMAL(38,0)) AS DOUBLE) / 2.0 AS u_a, round((CAST(ra2 - CAST(na AS DECIMAL(38,0)) * CAST(na + 1 AS DECIMAL(38,0)) AS DOUBLE) - CAST(na AS DOUBLE) * CAST(nb AS DOUBLE)) / (2.0 * sqrt(CAST(na AS DOUBLE) * CAST(nb AS DOUBLE) / 12.0 * ((CAST(na + nb AS DOUBLE) + 1.0) - CAST(ties AS DOUBLE) / (CAST(na + nb AS DOUBLE) * (CAST(na + nb AS DOUBLE) - 1.0))))), 6) AS z FROM ag""",
-    // median pairwise slope: lower-median rank over each key's slope set
-    "q320_theil_sen" ->
-      """WITH h AS (SELECT event_type, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS v FROM events GROUP BY 1, 2), p AS (SELECT a.event_type, CAST(b.v - a.v AS DOUBLE) / CAST(b.hid - a.hid AS DOUBLE) AS slope FROM h a JOIN h b ON a.event_type = b.event_type AND b.hid > a.hid), r AS (SELECT event_type, slope, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY slope) AS rn, COUNT(*) OVER (PARTITION BY event_type) AS np FROM p) SELECT event_type, np AS n_pairs, round(slope, 6) AS slope FROM r WHERE rn = (np + 1) // 2 ORDER BY event_type""",
-    // survival = sequential product of (1 - d/n_risk) over death times,
-    // replayed via list_reduce over the k-prefix (1.0-seeded, engine fold
-    // order)
-    "q321_kaplan_meier" ->
-      """WITH e AS (SELECT user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), b AS (SELECT MIN(sec) AS lo, MAX(sec) AS hi FROM e), u AS (SELECT user_id, MIN(sec) AS first, MAX(sec) AS last FROM e GROUP BY 1), lv AS (SELECT CAST((last - first) // 3600 AS BIGINT) AS t, CASE WHEN last > (SELECT lo + 2 * (hi - lo) // 3 FROM b) THEN 0 ELSE 1 END AS death FROM u), bt AS (SELECT t, CAST(SUM(death) AS BIGINT) AS d, CAST(SUM(1 - death) AS BIGINT) AS c, COUNT(*) AS n_t FROM lv GROUP BY 1), rk AS (SELECT t, d, c, CAST(SUM(n_t) OVER (ORDER BY t ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT) AS n_risk FROM bt), f AS (SELECT t, d, c, n_risk, 1.0 - CAST(d AS DOUBLE) / CAST(n_risk AS DOUBLE) AS factor FROM rk), idx AS (SELECT t, d, c, n_risk, ROW_NUMBER() OVER (ORDER BY t) AS i FROM f), arr AS (SELECT list(factor ORDER BY t) AS fs FROM f) SELECT t, d AS n_death, c AS n_censored, n_risk, round(list_reduce(list_prepend(CAST(1 AS DOUBLE), fs[1:CAST(i AS INTEGER)]), (a, x) -> a * x), 6) AS survival FROM idx, arr ORDER BY t""",
-    // class size, distinct sensitive buckets, dominant share, l>=3 flag
-    "q322_l_diversity" ->
-      """WITH c AS (SELECT c_nationkey, c_mktsegment, CAST(FLOOR(CAST(c_acctbal AS DOUBLE) / 2000.0) AS BIGINT) AS bal_bucket FROM customer), cells AS (SELECT c_nationkey, c_mktsegment, bal_bucket, COUNT(*) AS n FROM c GROUP BY 1, 2, 3) SELECT c_nationkey, c_mktsegment, CAST(SUM(n) AS BIGINT) AS class_size, COUNT(*) AS n_sensitive, CAST(MAX(n) AS BIGINT) AS max_sensitive_n, round(CAST(MAX(n) AS DOUBLE) / CAST(SUM(n) AS DOUBLE), 6) AS dominant_share, CAST(COUNT(*) >= 3 AS INTEGER) AS diverse FROM cells GROUP BY 1, 2 ORDER BY 1, 2""",
-    // LOO encode: (catSum - own + prior*m) / (catN - 1 + m), m = 10
-    "q324_target_encoding" ->
-      """WITH o AS (SELECT o_orderkey, c_mktsegment AS segment, CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS target FROM orders JOIN customer ON o_custkey = c_custkey), cs AS (SELECT segment, SUM(target) AS cssum, COUNT(*) AS cn FROM o GROUP BY 1), g AS (SELECT SUM(target) AS gs, COUNT(*) AS gn FROM o) SELECT o.o_orderkey, o.segment, CAST(o.target AS BIGINT) AS target, round((CAST(cs.cssum - o.target AS DOUBLE) + CAST(g.gs AS DOUBLE) / CAST(g.gn AS DOUBLE) * 10.0) / (CAST(cs.cn - 1 AS DOUBLE) + 10.0), 6) AS enc FROM o, g JOIN cs ON cs.segment = o.segment ORDER BY o.o_orderkey""",
-    // per-bin ln(goodShare/badShare) with +0.5 smoothing; IV total on the
-    // 1e-9 decimal grid (raw woe inside the iv term, rounded woe emitted)
-    "q325_woe_iv" ->
-      """WITH b AS (SELECT MIN(CAST(o_totalprice AS DOUBLE)) AS mn, MAX(CAST(o_totalprice AS DOUBLE)) AS mx, CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS ng, CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 0 ELSE 1 END) AS BIGINT) AS nb FROM orders), c AS (SELECT CAST(LEAST(FLOOR((CAST(o_totalprice AS DOUBLE) - mn) * 10.0 / (mx - mn)), 9) AS BIGINT) AS bin, CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS g, CAST(SUM(CASE WHEN o_orderstatus = 'F' THEN 0 ELSE 1 END) AS BIGINT) AS bd FROM orders, b GROUP BY 1), w AS (SELECT bin, g, bd, ln(((CAST(g AS DOUBLE) + 0.5) / CAST((SELECT ng FROM b) AS DOUBLE)) / ((CAST(bd AS DOUBLE) + 0.5) / CAST((SELECT nb FROM b) AS DOUBLE))) AS woe_raw, (CAST(g AS DOUBLE) + 0.5) / CAST((SELECT ng FROM b) AS DOUBLE) - (CAST(bd AS DOUBLE) + 0.5) / CAST((SELECT nb FROM b) AS DOUBLE) AS dd FROM c), t AS (SELECT bin, g, bd, woe_raw, CAST(round(dd * woe_raw, 9) AS DECIMAL(18,9)) AS ivt FROM w) SELECT bin, g AS n_good, bd AS n_bad, round(woe_raw, 6) AS woe, CAST(ivt AS DOUBLE) AS iv_term, CAST(SUM(ivt) OVER () AS DOUBLE) AS iv_total FROM t ORDER BY bin""",
-    // the standing bottom-k store must equal the one-shot global bottom-k
-    "q326_stream_quantile_sketch" ->
-      """WITH e AS (SELECT event_id AS id, CAST(value AS DOUBLE) AS v, CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR)), 1, 13)) AS BIGINT) AS h FROM events), m AS (SELECT v FROM (SELECT v, ROW_NUMBER() OVER (ORDER BY h, id) AS rn FROM e) WHERE rn <= 256), arr AS (SELECT list_sort(list(v)) AS vals, COUNT(*) AS kk FROM m), tot AS (SELECT COUNT(*) AS n_total FROM e), spine AS (SELECT * FROM (VALUES (0.5), (0.9), (0.99)) AS t(q)) SELECT q AS quantile, vals[CAST(GREATEST(1, CEIL(q * kk)) AS INTEGER)] AS est, kk AS sample_k, n_total FROM spine, arr, tot ORDER BY quantile""",
-    // per-day census in integer second arithmetic
-    "q327_freshness_audit" ->
-      """WITH e AS (SELECT CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events) SELECT sec // 86400 AS day, COUNT(*) AS n_events, COUNT(DISTINCT (sec // 3600) % 24) AS n_hours, MIN(sec) % 86400 AS head_offset_sec, 86399 - MAX(sec) % 86400 AS tail_gap_sec, CAST(COUNT(DISTINCT (sec // 3600) % 24) = 24 AS INTEGER) AS complete FROM e GROUP BY 1 ORDER BY 1""",
-    // per-dim decimal sums of 1e-6-rounded components; cosine of mean
-    // vectors from 1e-12-grid cross-dim products
-    "q328_embedding_drift" ->
-      """WITH x AS (SELECT label % 2 = 0 AS isa, unnest(list_zip(embedding, range(0, len(embedding)))) AS z FROM embeddings), d AS (SELECT CAST(z[2] AS BIGINT) AS dim, isa, CAST(round(CAST(z[1] AS DOUBLE), 6) AS DECIMAL(18,6)) AS c FROM x), a AS (SELECT dim, SUM(CASE WHEN isa THEN c END) AS sa, CAST(SUM(CASE WHEN isa THEN 1 ELSE 0 END) AS BIGINT) AS na, SUM(CASE WHEN NOT isa THEN c END) AS sb, CAST(SUM(CASE WHEN NOT isa THEN 1 ELSE 0 END) AS BIGINT) AS nb FROM d GROUP BY 1), mm AS (SELECT dim, CAST(sa AS DOUBLE) / CAST(na AS DOUBLE) AS ma, CAST(sb AS DOUBLE) / CAST(nb AS DOUBLE) AS mb FROM a), g AS (SELECT dim, ma, mb, CAST(round(ma * mb, 12) AS DECIMAL(30,12)) AS ab, CAST(round(ma * ma, 12) AS DECIMAL(30,12)) AS aa, CAST(round(mb * mb, 12) AS DECIMAL(30,12)) AS bb FROM mm) SELECT dim, round(ma, 6) AS mean_a, round(mb, 6) AS mean_b, round(ma - mb, 6) AS shift, round(CAST(SUM(ab) OVER () AS DOUBLE) / (sqrt(CAST(SUM(aa) OVER () AS DOUBLE)) * sqrt(CAST(SUM(bb) OVER () AS DOUBLE))), 6) AS mean_cosine FROM g ORDER BY dim""",
-    // P/R/F1 at the threshold + exact tie-averaged rank AUC
-    "q330_binary_metrics" ->
-      """WITH e AS (SELECT CAST(o_totalprice AS DOUBLE) AS v, o_orderstatus = 'F' AS lab FROM orders), bv AS (SELECT v, CAST(SUM(CASE WHEN lab THEN 1 ELSE 0 END) AS BIGINT) AS tp1, CAST(SUM(CASE WHEN lab THEN 0 ELSE 1 END) AS BIGINT) AS tn1 FROM e GROUP BY v), rk AS (SELECT v, tp1, tn1, tp1 + tn1 AS t, SUM(tp1 + tn1) OVER (ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c FROM bv), ag AS (SELECT CAST(SUM(tp1) AS BIGINT) AS np, CAST(SUM(tn1) AS BIGINT) AS nn, SUM(CAST(tp1 AS DECIMAL(38,0)) * CAST(2 * c - t + 1 AS DECIMAL(38,0))) AS rp2, CAST(SUM(CASE WHEN v >= 150000.0 THEN tp1 ELSE 0 END) AS BIGINT) AS tp, CAST(SUM(CASE WHEN v >= 150000.0 THEN tn1 ELSE 0 END) AS BIGINT) AS fp, CAST(SUM(CASE WHEN v < 150000.0 THEN tp1 ELSE 0 END) AS BIGINT) AS fn, CAST(SUM(CASE WHEN v < 150000.0 THEN tn1 ELSE 0 END) AS BIGINT) AS tn FROM rk) SELECT np AS n_pos, nn AS n_neg, tp, fp, fn, tn, round(CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE), 6) AS precision, round(CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE), 6) AS recall, round(2.0 * (CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE)) * (CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE)) / ((CAST(tp AS DOUBLE) / CAST(tp + fp AS DOUBLE)) + (CAST(tp AS DOUBLE) / CAST(tp + fn AS DOUBLE))), 6) AS f1, round(CAST(rp2 - CAST(np AS DECIMAL(38,0)) * CAST(np + 1 AS DECIMAL(38,0)) AS DOUBLE) / (2.0 * CAST(np AS DOUBLE) * CAST(nn AS DOUBLE)), 6) AS auc FROM ag""",
-    // the same ordered-limit lateral, DuckDB spelling
-    "q331_lateral_topn" ->
-      """SELECT c.c_custkey, t.o_orderkey, t.price FROM customer c JOIN LATERAL (SELECT o_orderkey, CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price FROM orders o WHERE o.o_custkey = c.c_custkey ORDER BY o.o_totalprice DESC, o.o_orderkey LIMIT 2) t ON TRUE ORDER BY c.c_custkey, t.o_orderkey""",
-    // hex-pair byte census, per-byte -p*ln(p) on the 1e-9 grid
-    "q332_blob_entropy" ->
-      """WITH d AS (SELECT doc_id, hex(encode(text)) AS hx FROM documents), b AS (SELECT doc_id, unnest(list_transform(range(0, length(hx) // 2), i -> substr(hx, CAST(i * 2 + 1 AS INTEGER), 2))) AS byte FROM d), c AS (SELECT doc_id, byte, COUNT(*) AS c FROM b GROUP BY 1, 2), t AS (SELECT doc_id, byte, c, CAST(SUM(c) OVER (PARTITION BY doc_id) AS BIGINT) AS n FROM c), e AS (SELECT doc_id, n, CAST(round(-(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)) * ln(CAST(c AS DOUBLE) / CAST(n AS DOUBLE)), 9) AS DECIMAL(18,9)) AS term FROM t) SELECT doc_id, MAX(n) AS n_bytes, COUNT(*) AS n_distinct_bytes, CAST(SUM(term) AS DOUBLE) AS entropy FROM e GROUP BY 1 ORDER BY 1""",
-    // v(S) = converting users with touched-set ⊆ S; φ exact over the 16
-    // coalitions with 4!-scaled integer weights (6,2,2,6)
-    "q333_shapley_attribution" ->
-      """WITH u AS (SELECT user_id, MAX(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) + MAX(CASE WHEN event_type = 'view' THEN 2 ELSE 0 END) + MAX(CASE WHEN event_type = 'signup' THEN 4 ELSE 0 END) + MAX(CASE WHEN event_type = 'error' THEN 8 ELSE 0 END) AS mask, MAX(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv FROM events GROUP BY 1), mc AS (SELECT mask, COUNT(*) AS n FROM u WHERE conv = 1 GROUP BY 1), coal AS (SELECT CAST(unnest(range(0, 16)) AS INTEGER) AS s), vv AS (SELECT s, (s // 1) % 2 + (s // 2) % 2 + (s // 4) % 2 + (s // 8) % 2 AS sz, CAST(COALESCE(SUM(n), 0) AS BIGINT) AS v FROM coal LEFT JOIN mc ON (s | mask) = s GROUP BY 1, 2), ch AS (SELECT * FROM (VALUES ('click', 1), ('view', 2), ('signup', 4), ('error', 8)) AS t(channel, bit)), pairs AS (SELECT ch.channel, b.sz, b.v AS v_without, w.v AS v_with FROM ch JOIN vv b ON (b.s & ch.bit) = 0 JOIN vv w ON w.s = (b.s | ch.bit)) SELECT channel, round(CAST(SUM((CASE sz WHEN 0 THEN 6 WHEN 1 THEN 2 WHEN 2 THEN 2 WHEN 3 THEN 6 END) * (v_with - v_without)) AS DOUBLE) / 24.0, 6) AS phi FROM pairs GROUP BY 1 ORDER BY channel""",
-    // sweep-line merge: new span iff start clears the running max end
-    "q334_interval_union" ->
-      """WITH e AS (SELECT user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS s, CAST(epoch_ns(ts) // 1000000000 + 600 AS BIGINT) AS e FROM events), m AS (SELECT user_id, s, e, CASE WHEN MAX(e) OVER w IS NULL OR s > MAX(e) OVER w THEN 1 ELSE 0 END AS nw FROM e WINDOW w AS (PARTITION BY user_id ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)), g AS (SELECT user_id, s, e, SUM(nw) OVER (PARTITION BY user_id ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS span FROM m) SELECT user_id, MIN(s) AS span_start, MAX(e) AS span_end, COUNT(*) AS n_merged FROM g GROUP BY user_id, span ORDER BY user_id, span_start""",
-    // tie-averaged doubled ranks per variable, Pearson over the ranks
-    "q335_spearman" ->
-      """WITH per AS (SELECT user_id, CAST(COUNT(*) AS DOUBLE) AS x, CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS DOUBLE) AS y FROM events GROUP BY 1), rx AS (SELECT v, 2 * cc - t + 1 AS r2 FROM (SELECT x AS v, COUNT(*) AS t, SUM(COUNT(*)) OVER (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cc FROM per GROUP BY x)), ry AS (SELECT v, 2 * cc - t + 1 AS r2 FROM (SELECT y AS v, COUNT(*) AS t, SUM(COUNT(*)) OVER (ORDER BY y ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cc FROM per GROUP BY y)), j AS (SELECT rx.r2 AS rxx, ry.r2 AS ryy FROM per JOIN rx ON per.x = rx.v JOIN ry ON per.y = ry.v), a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, SUM(CAST(rxx AS DECIMAL(38,0))) AS sx, SUM(CAST(ryy AS DECIMAL(38,0))) AS sy, SUM(CAST(rxx AS DECIMAL(38,0)) * CAST(rxx AS DECIMAL(38,0))) AS sxx, SUM(CAST(ryy AS DECIMAL(38,0)) * CAST(ryy AS DECIMAL(38,0))) AS syy, SUM(CAST(rxx AS DECIMAL(38,0)) * CAST(ryy AS DECIMAL(38,0))) AS sxy FROM j) SELECT n, round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) * sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) AS rho FROM a""",
-    // one canonical (subject, source, key, md5) listing per probed user
-    "q336_subject_access" ->
-      """WITH subj AS (SELECT DISTINCT user_id AS subject_id FROM events WHERE event_type = 'purchase' ORDER BY 1 LIMIT 2), ev AS (SELECT subject_id, 'events' AS source, event_id AS record_key, md5(concat_ws('|', user_id, event_type, epoch_ns(ts) // 1000000000, CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))) AS payload_md5 FROM events JOIN subj ON user_id = subject_id), ord AS (SELECT subject_id, 'orders' AS source, o_orderkey AS record_key, md5(concat_ws('|', o_orderkey, o_orderstatus, CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))) AS payload_md5 FROM orders JOIN subj ON o_custkey = subject_id), cust AS (SELECT subject_id, 'customer' AS source, c_custkey AS record_key, md5(concat_ws('|', c_name, c_mktsegment)) AS payload_md5 FROM customer JOIN subj ON c_custkey = subject_id) SELECT * FROM (SELECT * FROM ev UNION ALL SELECT * FROM ord UNION ALL SELECT * FROM cust) ORDER BY subject_id, source, record_key""",
-    // park-and-replay must converge to the one-shot left join
-    "q337_late_dimension" ->
-      """SELECT o_orderkey, o_custkey, c_mktsegment AS segment FROM orders LEFT JOIN customer ON o_custkey = c_custkey AND c_custkey % 97 <> 0 ORDER BY o_orderkey""",
-    // G = (2*sum(i*x) - (n+1)*sum(x)) / (n*sum(x)) over ascending ranks
-    "q338_gini" ->
-      """WITH r AS (SELECT o_custkey, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents FROM orders GROUP BY 1), rk AS (SELECT cents, ROW_NUMBER() OVER (ORDER BY cents, o_custkey) AS i FROM r), a AS (SELECT CAST(COUNT(*) AS BIGINT) AS n, CAST(SUM(cents) AS BIGINT) AS total_cents, SUM(CAST(i AS DECIMAL(38,0)) * CAST(cents AS DECIMAL(38,0))) AS s2 FROM rk) SELECT n, total_cents, round(CAST(2 * s2 - CAST(n + 1 AS DECIMAL(38,0)) * CAST(total_cents AS DECIMAL(38,0)) AS DOUBLE) / CAST(CAST(n AS DECIMAL(38,0)) * CAST(total_cents AS DECIMAL(38,0)) AS DOUBLE), 6) AS gini FROM a""",
-    // class cut-offs as exact integer cross-products on the cumulative
-    "q339_abc_classes" ->
-      """WITH r AS (SELECT l_partkey, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) * 100 AS BIGINT) AS cents FROM lineitem GROUP BY 1), c AS (SELECT cents, CAST(SUM(cents) OVER (ORDER BY cents DESC, l_partkey ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DECIMAL(38,0)) AS cum, CAST(SUM(cents) OVER () AS DECIMAL(38,0)) AS tot FROM r), k AS (SELECT CASE WHEN cum * 100 <= tot * 80 THEN 'A' WHEN cum * 100 <= tot * 95 THEN 'B' ELSE 'C' END AS abc_class, cents, tot FROM c) SELECT abc_class, COUNT(*) AS n_parts, CAST(SUM(cents) AS BIGINT) AS cents, round(CAST(CAST(SUM(cents) AS BIGINT) AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS share FROM k GROUP BY abc_class, tot ORDER BY abc_class""",
-    // truth = exact 3-shingle Jaccard >= 0.35 on the capped sample;
-    // candidates = the q84 minhash pipeline at 0.3; meter = hits over both
-    "q340_dedup_recall" ->
-      s"""$HASH_MACROS; WITH hs AS ($DOC_HASHES), shingled AS (SELECT doc_id, list_transform(range(CASE WHEN n >= 3 THEN n - 2 ELSE 1 END), p -> shmix(shmix(h[p+1], coalesce(h[p+2], ${padLit(1)})), coalesce(h[p+3], ${padLit(2)}))) AS sh FROM hs WHERE doc_id < 300), sets AS (SELECT doc_id AS id, list_sort(list_distinct(list_transform(sh, s -> tosigned(s)))) AS g FROM shingled), tp AS (SELECT a.id AS id_a, b.id AS id_b FROM sets a JOIN sets b ON a.id < b.id WHERE CAST(len(list_intersect(a.g, b.g)) AS DOUBLE) / CAST(len(list_distinct(list_concat(a.g, b.g))) AS DOUBLE) >= 0.35), sigs AS (SELECT doc_id AS id, $sigSql AS sig FROM shingled), bands AS (SELECT id, sig, unnest(list_zip([${(0 until 8).map(bandSql).mkString(", ")}], [0,1,2,3,4,5,6,7])) AS z FROM sigs), wb AS (SELECT id, sig, z[2] AS band_idx, z[1] AS band_hash, ROW_NUMBER() OVER (PARTITION BY z[2], z[1] ORDER BY id) AS rn FROM bands), cp AS (SELECT DISTINCT a.id AS id_a, b.id AS id_b FROM wb a JOIN wb b ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash AND a.id < b.id WHERE a.rn <= 64 AND b.rn <= 64 AND CAST(len(list_filter(range(32), i -> a.sig[i+1] = b.sig[i+1])) AS DOUBLE) / 32.0 >= 0.3), j AS (SELECT CASE WHEN tp.id_a IS NOT NULL THEN 1 ELSE 0 END AS t, CASE WHEN cp.id_a IS NOT NULL THEN 1 ELSE 0 END AS c FROM tp FULL OUTER JOIN cp ON tp.id_a = cp.id_a AND tp.id_b = cp.id_b), a AS (SELECT CAST(SUM(t) AS BIGINT) AS n_truth, CAST(SUM(c) AS BIGINT) AS n_cand, CAST(SUM(t * c) AS BIGINT) AS n_hit FROM j) SELECT n_truth, n_cand, n_hit, round(CAST(n_hit AS DOUBLE) / CAST(n_truth AS DOUBLE), 6) AS recall, round(CAST(n_hit AS DOUBLE) / CAST(n_cand AS DOUBLE), 6) AS precision FROM a""",
-    // retractions replay declaratively: last surviving value per key
-    "q342_ivm_retract" ->
-      """WITH f AS (SELECT o_orderstatus AS st, CASE WHEN o_orderkey % 5 = 0 THEN CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) * 2 ELSE CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) END AS cents FROM orders WHERE o_orderkey % 7 <> 0) SELECT st, COUNT(*) AS n, CAST(SUM(cents) AS BIGINT) AS cents FROM f GROUP BY 1 ORDER BY 1""",
-    // per-source quota then global re-rank
-    "q343_quota_topk" ->
-      """WITH r AS (SELECT doc_id, source, n_chars, ROW_NUMBER() OVER (PARTITION BY source ORDER BY n_chars DESC, doc_id) AS src_rank FROM documents), q AS (SELECT * FROM r WHERE src_rank <= 2 ORDER BY n_chars DESC, doc_id LIMIT 10) SELECT doc_id, source, n_chars, src_rank FROM q ORDER BY doc_id""",
-    // observed rank of each bottom-k estimate vs its target quantile
-    "q344_sketch_error" ->
-      """WITH e AS (SELECT strftime(ts, '%Y-%m-%d') AS seg, event_id AS id, CAST(value AS DOUBLE) AS v, CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR)), 1, 13)) AS BIGINT) AS h FROM events), sk AS (SELECT seg, h, id, v FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY seg ORDER BY h, id) AS rn FROM e) WHERE rn <= 256), m AS (SELECT v FROM (SELECT v, ROW_NUMBER() OVER (ORDER BY h, id) AS grn FROM sk) WHERE grn <= 256), arr AS (SELECT list_sort(list(v)) AS vals, COUNT(*) AS kk FROM m), tot AS (SELECT COUNT(*) AS n_total FROM e), spine AS (SELECT * FROM (VALUES (0.5), (0.9), (0.99)) AS t(q)), est AS (SELECT q AS quantile, vals[CAST(GREATEST(1, CEIL(q * kk)) AS INTEGER)] AS est, n_total FROM spine, arr, tot) SELECT quantile, est, CAST(SUM(CASE WHEN e2.v <= est THEN 1 ELSE 0 END) AS BIGINT) AS n_le, n_total, round(abs(CAST(SUM(CASE WHEN e2.v <= est THEN 1 ELSE 0 END) AS BIGINT) / CAST(n_total AS DOUBLE) - quantile), 6) AS rank_error FROM est, e e2 GROUP BY quantile, est, n_total ORDER BY quantile""",
-    // dynamic-gap sessions = variable-end interval-union sweep
-    "q345_stream_dynamic_sessions" ->
-      """WITH e AS (SELECT user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS s, CAST(epoch_ns(ts) // 1000000000 + CASE WHEN event_type = 'purchase' THEN 3600 ELSE 1800 END AS BIGINT) AS en FROM events), m AS (SELECT user_id, s, en, CASE WHEN MAX(en) OVER w IS NULL OR s > MAX(en) OVER w THEN 1 ELSE 0 END AS nw FROM e WINDOW w AS (PARTITION BY user_id ORDER BY s, en ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)), g AS (SELECT user_id, s, en, SUM(nw) OVER (PARTITION BY user_id ORDER BY s, en ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS span FROM m) SELECT user_id, MIN(s) AS start_sec, MAX(en) AS end_sec, COUNT(*) AS n_events FROM g GROUP BY user_id, span ORDER BY user_id, start_sec""",
-    // multiwindow burn: page only when BOTH 1h and 6h rates exceed
-    "q346_slo_burn" ->
-      """WITH h AS (SELECT epoch_ns(ts) // 1000000000 // 3600 AS hid, COUNT(*) AS total, CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS errs FROM events GROUP BY 1), w AS (SELECT hid, total, errs, CAST(SUM(errs) OVER (ORDER BY hid ROWS BETWEEN 5 PRECEDING AND CURRENT ROW) AS BIGINT) AS errs6, CAST(SUM(total) OVER (ORDER BY hid ROWS BETWEEN 5 PRECEDING AND CURRENT ROW) AS BIGINT) AS total6 FROM h) SELECT hid, total, errs, round(CAST(errs AS DOUBLE) / CAST(total AS DOUBLE) / 0.01, 6) AS burn_1h, round(CAST(errs6 AS DOUBLE) / CAST(total6 AS DOUBLE) / 0.01, 6) AS burn_6h, CAST(CAST(errs AS DOUBLE) / CAST(total AS DOUBLE) / 0.01 > 14.4 AND CAST(errs6 AS DOUBLE) / CAST(total6 AS DOUBLE) / 0.01 > 6.0 AS INTEGER) AS page FROM w ORDER BY hid""",
-    // commuting XOR of row hashes: partitioning/order/engine invisible
-    "q348_table_fingerprint" ->
-      """WITH o AS (SELECT CAST(concat('0x', substr(md5(concat_ws('|', coalesce(CAST(o_orderkey AS VARCHAR), chr(0)), coalesce(CAST(o_orderstatus AS VARCHAR), chr(0)), coalesce(CAST(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS VARCHAR), chr(0)))), 1, 13)) AS BIGINT) AS h FROM orders), c AS (SELECT CAST(concat('0x', substr(md5(concat_ws('|', coalesce(CAST(c_custkey AS VARCHAR), chr(0)), coalesce(CAST(c_name AS VARCHAR), chr(0)), coalesce(CAST(c_mktsegment AS VARCHAR), chr(0)))), 1, 13)) AS BIGINT) AS h FROM customer), l AS (SELECT CAST(concat('0x', substr(md5(concat_ws('|', coalesce(CAST(l_orderkey AS VARCHAR), chr(0)), coalesce(CAST(l_partkey AS VARCHAR), chr(0)), coalesce(CAST(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS VARCHAR), chr(0)))), 1, 13)) AS BIGINT) AS h FROM lineitem) SELECT * FROM (SELECT 'customer' AS table_name, COUNT(*) AS n_rows, CAST(bit_xor(h) AS BIGINT) AS xor_fp FROM c UNION ALL SELECT 'lineitem', COUNT(*), CAST(bit_xor(h) AS BIGINT) FROM l UNION ALL SELECT 'orders', COUNT(*), CAST(bit_xor(h) AS BIGINT) FROM o) ORDER BY table_name""",
-    // the staged funnel replays stage by stage: quality → bench-exclude →
-    // lang → min-id exact dedup → 4-gram decontamination (q141's gram
-    // fragment) → hash-ranked balanced downsample (q329's rule)
-    "q350_pipeline_funnel" ->
-      s"""$HASH_MACROS; WITH w AS (SELECT doc_id, lang, n_chars, docwords(text) AS ws FROM documents), s1 AS (SELECT * FROM w WHERE len(ws) >= 10 AND n_chars >= 50 AND doc_id % 97 <> 0), s2 AS (SELECT * FROM s1 WHERE lang IN ('en', 'es', 'fr')), k AS (SELECT doc_id, lang, ws, md5(array_to_string(ws, ' ')) AS kk FROM s2), s3 AS (SELECT k.doc_id, k.lang, k.ws FROM k JOIN (SELECT kk AS k2, MIN(doc_id) AS md FROM k GROUP BY 1) m ON k.kk = m.k2 AND k.doc_id = m.md), bg0 AS (SELECT unnest(list_transform(range(1, len(ws) - 2), i -> array_to_string(ws[i:i+3], ' '))) AS gram FROM w WHERE doc_id % 97 = 0 AND len(ws) >= 4), bg AS (SELECT DISTINCT gram FROM bg0), dg0 AS (SELECT doc_id, lang, unnest(list_transform(range(1, len(ws) - 2), i -> array_to_string(ws[i:i+3], ' '))) AS gram FROM s3 WHERE len(ws) >= 4), dg AS (SELECT DISTINCT doc_id, lang, gram FROM dg0), ct AS (SELECT dg.doc_id, dg.lang, COUNT(*) AS ns, CAST(SUM(CASE WHEN bg.gram IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS nh FROM dg LEFT JOIN bg ON dg.gram = bg.gram GROUP BY 1, 2), s4 AS (SELECT doc_id, lang FROM ct WHERE nh * 2 < ns), mn AS (SELECT MIN(n) AS m FROM (SELECT COUNT(*) AS n FROM s4 GROUP BY lang)), r5 AS (SELECT doc_id, lang, ROW_NUMBER() OVER (PARTITION BY lang ORDER BY CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT), doc_id) AS rn FROM s4), s5 AS (SELECT doc_id, lang FROM r5, mn WHERE rn <= m), f AS (SELECT 's0_raw' AS stage, lang, COUNT(*) AS n_docs FROM w GROUP BY 2 UNION ALL SELECT 's1_quality', lang, COUNT(*) FROM s1 GROUP BY 2 UNION ALL SELECT 's2_lang', lang, COUNT(*) FROM s2 GROUP BY 2 UNION ALL SELECT 's3_exact_dedup', lang, COUNT(*) FROM s3 GROUP BY 2 UNION ALL SELECT 's4_decontaminated', lang, COUNT(*) FROM s4 GROUP BY 2 UNION ALL SELECT 's5_balanced', lang, COUNT(*) FROM s5 GROUP BY 2) SELECT stage, lang, n_docs FROM f ORDER BY stage, lang""",
-    // the bucket-sequential LTTB selection replays as a recursive CTE
-    // carrying the anchor; argmax ties break earliest on both engines
-    "q353_lttb_downsample" ->
-      """WITH RECURSIVE h AS (SELECT event_type, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS v FROM events GROUP BY 1, 2), pts AS (SELECT event_type AS key, list(struct_pack(x := hid, y := v) ORDER BY hid) AS p, CAST(COUNT(*) AS BIGINT) AS n FROM h GROUP BY 1 HAVING COUNT(*) > 20), rec AS (SELECT key, CAST(0 AS BIGINT) AS step, CAST(p[1]['x'] AS DOUBLE) AS ax, CAST(p[1]['y'] AS DOUBLE) AS ay, CAST(0 AS BIGINT) AS chosen FROM pts UNION ALL SELECT z.key, z.step + 1, CAST(z.p[z.bj]['x'] AS DOUBLE), CAST(z.p[z.bj]['y'] AS DOUBLE), z.bj FROM (SELECT t.key, t.step, t.p, t.best['j'] AS bj FROM (SELECT u.key, u.step, u.p, list_reduce(list_transform(range(u.lo, u.hi + 1), j -> struct_pack(a := abs((u.ax - u.cx) * (CAST(u.p[j]['y'] AS DOUBLE) - u.ay) - (u.ax - CAST(u.p[j]['x'] AS DOUBLE)) * (u.cy - u.ay)), j := j)), (acc, e) -> CASE WHEN e['a'] > acc['a'] THEN e ELSE acc END) AS best FROM (SELECT r.key, r.step, r.ax, r.ay, pts.p, pts.n, 2 + (r.step * (pts.n - 2)) // 18 AS lo, 1 + ((r.step + 1) * (pts.n - 2)) // 18 AS hi, CASE WHEN r.step = 17 THEN CAST(pts.p[CAST(pts.n AS INTEGER)]['x'] AS DOUBLE) ELSE list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(pts.p[(2 + ((r.step + 1) * (pts.n - 2)) // 18):(1 + ((r.step + 2) * (pts.n - 2)) // 18)], e -> CAST(e['x'] AS DOUBLE))), (a, b) -> a + b) / CAST((1 + ((r.step + 2) * (pts.n - 2)) // 18) - (2 + ((r.step + 1) * (pts.n - 2)) // 18) + 1 AS DOUBLE) END AS cx, CASE WHEN r.step = 17 THEN CAST(pts.p[CAST(pts.n AS INTEGER)]['y'] AS DOUBLE) ELSE list_reduce(list_prepend(CAST(0 AS DOUBLE), list_transform(pts.p[(2 + ((r.step + 1) * (pts.n - 2)) // 18):(1 + ((r.step + 2) * (pts.n - 2)) // 18)], e -> CAST(e['y'] AS DOUBLE))), (a, b) -> a + b) / CAST((1 + ((r.step + 2) * (pts.n - 2)) // 18) - (2 + ((r.step + 1) * (pts.n - 2)) // 18) + 1 AS DOUBLE) END AS cy FROM rec r JOIN pts ON pts.key = r.key WHERE r.step < 18) u) t) z), final AS (SELECT key, CAST(1 AS BIGINT) AS idx FROM pts UNION ALL SELECT key, chosen FROM rec WHERE step >= 1 UNION ALL SELECT key, n FROM pts) SELECT f.key AS event_type, f.idx, pts.p[CAST(f.idx AS INTEGER)]['x'] AS x, pts.p[CAST(f.idx AS INTEGER)]['y'] AS y FROM final f JOIN pts ON pts.key = f.key ORDER BY event_type, idx""",
-    // the reshape round-trip is the identity
-    "q354_pivot_roundtrip" ->
-      """SELECT c_custkey, CAST(c_acctbal AS DOUBLE) AS balance, CAST(c_nationkey AS DOUBLE) AS nation FROM customer ORDER BY c_custkey""",
-    // finalized-hour burn rates must equal the batch burn table (q346)
-    "q351_stream_slo_burn" ->
-      """WITH h AS (SELECT epoch_ns(ts) // 1000000000 // 3600 AS hid, COUNT(*) AS total, CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS errs FROM events GROUP BY 1), w AS (SELECT hid, total, errs, CAST(SUM(errs) OVER (ORDER BY hid ROWS BETWEEN 5 PRECEDING AND CURRENT ROW) AS BIGINT) AS errs6, CAST(SUM(total) OVER (ORDER BY hid ROWS BETWEEN 5 PRECEDING AND CURRENT ROW) AS BIGINT) AS total6 FROM h) SELECT hid, total, errs, round(CAST(errs AS DOUBLE) / CAST(total AS DOUBLE) / 0.01, 6) AS burn_1h, round(CAST(errs6 AS DOUBLE) / CAST(total6 AS DOUBLE) / 0.01, 6) AS burn_6h, CAST(CAST(errs AS DOUBLE) / CAST(total AS DOUBLE) / 0.01 > 14.4 AND CAST(errs6 AS DOUBLE) / CAST(total6 AS DOUBLE) / 0.01 > 6.0 AS INTEGER) AS page FROM w ORDER BY hid""",
-    // per-group bottom-k replay: (g, seg) build windows, g-keyed merge
-    "q352_grouped_quantile_sketch" ->
-      """WITH e AS (SELECT event_type AS g, strftime(ts, '%Y-%m-%d') AS seg, event_id AS id, CAST(value AS DOUBLE) AS v, CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR)), 1, 13)) AS BIGINT) AS h FROM events), sk AS (SELECT g, seg, h, id, v FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY g, seg ORDER BY h, id) AS rn FROM e) WHERE rn <= 128), m AS (SELECT g, v FROM (SELECT g, v, ROW_NUMBER() OVER (PARTITION BY g ORDER BY h, id) AS grn FROM sk) WHERE grn <= 128), arr AS (SELECT g, list_sort(list(v)) AS vals, COUNT(*) AS kk FROM m GROUP BY 1), tot AS (SELECT g, COUNT(*) AS n_total FROM e GROUP BY 1), spine AS (SELECT * FROM (VALUES (0.5), (0.9), (0.99)) AS t(q)) SELECT arr.g AS event_type, q AS quantile, vals[CAST(GREATEST(1, CEIL(q * kk)) AS INTEGER)] AS est, kk AS sample_k, n_total FROM spine, arr JOIN tot ON arr.g = tot.g ORDER BY event_type, quantile""",
-    // the maintained span store must equal the one-shot sweep (q334)
-    "q349_stream_interval_union" ->
-      """WITH e AS (SELECT user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS s, CAST(epoch_ns(ts) // 1000000000 + 600 AS BIGINT) AS e FROM events), m AS (SELECT user_id, s, e, CASE WHEN MAX(e) OVER w IS NULL OR s > MAX(e) OVER w THEN 1 ELSE 0 END AS nw FROM e WINDOW w AS (PARTITION BY user_id ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)), g AS (SELECT user_id, s, e, CAST(SUM(nw) OVER (PARTITION BY user_id ORDER BY s, e ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS span FROM m) SELECT user_id, MIN(s) AS span_start, MAX(e) AS span_end, COUNT(*) AS n_merged FROM g GROUP BY user_id, span ORDER BY user_id, span_start""",
-    // the hand-derived verdict table over every evolution-rule class
-    "q347_schema_compat" ->
-      """SELECT * FROM (VALUES ('a', 'ok_widened', 'int -> bigint'), ('b', 'ok', 'bigint'), ('c', 'break_dropped', 'string -> absent'), ('d', 'break_type', 'double -> string'), ('e', 'ok_widened', 'decimal(10,2) -> decimal(12,2)'), ('f', 'ok', 'string'), ('g', 'ok_added', 'absent -> string'), ('h', 'break_added_required', 'absent -> bigint NOT NULL'), ('i', 'break_now_required', 'string, now NOT NULL'), ('j', 'ok_relaxed', 'bigint, now nullable')) AS t(field, verdict, detail) ORDER BY field""",
-    // gap moments exact; B = (sd - mu) / (sd + mu) in pinned doubles
-    "q341_burstiness" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), g AS (SELECT user_id, sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec, event_id) AS gap FROM e), gg AS (SELECT user_id, gap FROM g WHERE gap IS NOT NULL), a AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n_gaps, SUM(CAST(gap AS DECIMAL(38,0))) AS sg, SUM(CAST(gap AS DECIMAL(38,0)) * CAST(gap AS DECIMAL(38,0))) AS sq FROM gg GROUP BY 1 HAVING COUNT(*) >= 3) SELECT user_id, n_gaps, round(CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE), 6) AS mean_gap, round((sqrt(CAST(n_gaps AS DOUBLE) * CAST(sq AS DOUBLE) - CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE)) / CAST(n_gaps AS DOUBLE) - CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE)) / (sqrt(CAST(n_gaps AS DOUBLE) * CAST(sq AS DOUBLE) - CAST(sg AS DOUBLE) * CAST(sg AS DOUBLE)) / CAST(n_gaps AS DOUBLE) + CAST(sg AS DOUBLE) / CAST(n_gaps AS DOUBLE)), 6) AS burstiness FROM a ORDER BY user_id""",
-    // every class keeps exactly the minority count, by md5-hash order
-    "q329_balanced_sample" ->
-      """WITH e AS (SELECT event_id, event_type, CAST(concat('0x', substr(md5(CAST(event_id AS VARCHAR)), 1, 13)) AS BIGINT) AS h FROM events), m AS (SELECT MIN(n) AS mn FROM (SELECT COUNT(*) AS n FROM e GROUP BY event_type)), r AS (SELECT event_id, event_type, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY h, event_id) AS rn FROM e) SELECT event_id, event_type FROM r, m WHERE rn <= mn ORDER BY event_type, event_id""",
-    // the identical recursion text modulo the integer-division token
-    "q323_recursive_sql" ->
-      """WITH RECURSIVE d AS (SELECT CAST(1 AS BIGINT) AS node, CAST(0 AS BIGINT) AS depth UNION ALL SELECT s.s_suppkey, d.depth + 1 FROM supplier s JOIN d ON s.s_suppkey // 2 = d.node) SELECT depth, COUNT(*) AS n, MIN(node) AS min_node, MAX(node) AS max_node FROM d GROUP BY depth ORDER BY depth""",
-    // layout must not change answers: the bucketed star equals the plain
-    // three-way join aggregate
-    "q309_star_bucketed" ->
-      """SELECT c_mktsegment, o_orderpriority, COUNT(*) AS n_lines, CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue, CAST(SUM(CAST(floor(l_quantity) AS BIGINT)) AS BIGINT) AS total_qty FROM lineitem JOIN orders ON l_orderkey = o_orderkey JOIN customer ON o_custkey = c_custkey GROUP BY 1, 2 ORDER BY 1, 2""",
-    // the same top-400-by-(support, pair) edge set, symmetric closure,
-    // bridge join and direct-pair anti-join — exact integer bridge
-    // counts and bottlenecks
-    "q306_two_hop_recs" ->
-      """WITH b AS (SELECT DISTINCT l_orderkey AS bk, p_partkey % 200 AS it FROM lineitem JOIN part ON l_partkey = p_partkey), p0 AS (SELECT l.it AS ia, r.it AS ib, COUNT(*) AS n_ab FROM b l JOIN b r ON l.bk = r.bk AND l.it < r.it GROUP BY 1, 2), p AS (SELECT ia, ib, n_ab FROM (SELECT *, ROW_NUMBER() OVER (ORDER BY n_ab DESC, ia ASC, ib ASC) AS rk FROM p0) WHERE rk <= 400), e AS (SELECT ia AS u, ib AS v, n_ab AS w FROM p UNION ALL SELECT ib, ia, n_ab FROM p), th AS (SELECT e1.u AS src, e2.v AS rec, LEAST(e1.w, e2.w) AS bw FROM e e1 JOIN e e2 ON e1.v = e2.u WHERE e1.u <> e2.v), filt AS (SELECT th.src, th.rec, th.bw FROM th WHERE NOT EXISTS (SELECT 1 FROM e WHERE e.u = th.src AND e.v = th.rec)) SELECT src, rec, COUNT(*) AS n_bridges, CAST(SUM(bw) AS BIGINT) AS bottleneck_support FROM filt GROUP BY 1, 2 ORDER BY 1, 2""",
-    // entropy terms on the 1e-9 grid decimal-summed per user; identical
-    // fixed gap edges and fixed-order p·ln(p) arithmetic
-    "q304_bot_score" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_ns(ts) // 1000000000 AS sec FROM events), g AS (SELECT user_id, sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec, event_id) AS gap FROM e), b AS (SELECT user_id, CASE WHEN gap < 60 THEN 0 WHEN gap < 300 THEN 1 WHEN gap < 900 THEN 2 WHEN gap < 3600 THEN 3 WHEN gap < 21600 THEN 4 ELSE 5 END AS bucket FROM g WHERE gap IS NOT NULL), c AS (SELECT user_id, bucket, COUNT(*) AS nb FROM b GROUP BY 1, 2), c2 AS (SELECT user_id, bucket, nb, SUM(nb) OVER (PARTITION BY user_id) AS n FROM c), t AS (SELECT user_id, nb, n, CAST(round(-(CAST(nb AS DOUBLE) / CAST(n AS DOUBLE) * ln(CAST(nb AS DOUBLE) / CAST(n AS DOUBLE))), 9) AS DECIMAL(18,9)) AS term FROM c2), a AS (SELECT user_id, CAST(MAX(n) AS BIGINT) AS n_gaps, COUNT(*) AS n_buckets, round(CAST(MAX(nb) AS DOUBLE) / CAST(MAX(n) AS DOUBLE), 6) AS top_share, CAST(SUM(term) AS DOUBLE) AS entropy FROM t GROUP BY 1) SELECT user_id, n_gaps, n_buckets, top_share, entropy, n_gaps >= 20 AND entropy < 0.6 AS bot_like FROM a ORDER BY user_id""",
-    // open/close replayed by the same (sec, event_id) total order; the
-    // decimal-exact mean replays via the house SUMV pattern
-    "q305_ohlc_bars" ->
-      """WITH e AS (SELECT event_type, event_id, value, epoch_ns(ts) // 1000000000 AS sec FROM events), h AS (SELECT *, sec // 3600 AS hour FROM e), r AS (SELECT event_type, hour, value, sec, event_id, ROW_NUMBER() OVER (PARTITION BY event_type, hour ORDER BY sec, event_id) AS rn_a, ROW_NUMBER() OVER (PARTITION BY event_type, hour ORDER BY sec DESC, event_id DESC) AS rn_z FROM h), a AS (SELECT event_type, hour, MAX(value) AS high, MIN(value) AS low, COUNT(*) AS volume, round(CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS mean_value FROM h GROUP BY 1, 2) SELECT a.event_type, a.hour, o.value AS open, a.high, a.low, c.value AS close, a.volume, a.mean_value FROM a JOIN r o ON a.event_type = o.event_type AND a.hour = o.hour AND o.rn_a = 1 JOIN r c ON a.event_type = c.event_type AND a.hour = c.hour AND c.rn_z = 1 ORDER BY a.event_type, a.hour""",
-    // same integer prefix sums, same pinned-order gain arithmetic,
-    // argmax on the 1e-6-rounded gain with the earliest-split tie-break
-    "q301_changepoint" ->
-      """WITH d AS (SELECT event_type, (epoch_ns(ts) // 1000000000) // 86400 AS day, COUNT(*) AS y FROM events GROUP BY 1, 2), w AS (SELECT event_type, day, y, COUNT(*) OVER run AS cn, SUM(y) OVER run AS cs, SUM(y * y) OVER run AS cq, COUNT(*) OVER k AS n, SUM(y) OVER k AS s, SUM(y * y) OVER k AS q FROM d WINDOW run AS (PARTITION BY event_type ORDER BY day ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), k AS (PARTITION BY event_type)), g AS (SELECT event_type, day, cn, n, cs, s, round((CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) / CAST(n AS DOUBLE)) - (CAST(cq AS DOUBLE) - CAST(cs AS DOUBLE) * CAST(cs AS DOUBLE) / CAST(cn AS DOUBLE)) - ((CAST(q AS DOUBLE) - CAST(cq AS DOUBLE)) - (CAST(s AS DOUBLE) - CAST(cs AS DOUBLE)) * (CAST(s AS DOUBLE) - CAST(cs AS DOUBLE)) / (CAST(n AS DOUBLE) - CAST(cn AS DOUBLE))), 6) AS gain FROM w WHERE cn < n), r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY gain DESC, day ASC) AS rk FROM g) SELECT event_type, day AS split_x, CAST(cn AS BIGINT) AS n_left, CAST(n - cn AS BIGINT) AS n_right, round(CAST(cs AS DOUBLE) / CAST(cn AS DOUBLE), 6) AS mean_left, round((CAST(s AS DOUBLE) - CAST(cs AS DOUBLE)) / (CAST(n AS DOUBLE) - CAST(cn AS DOUBLE)), 6) AS mean_right, gain FROM r WHERE rk = 1 ORDER BY event_type""",
-    // same canonical tokenization (docwords), 1-based oracle positions
-    // cancel in the differences; doc-local pair min, exact integers
-    "q302_proximity_search" ->
-      s"""$HASH_MACROS; WITH w AS (SELECT doc_id, docwords(text) AS ws FROM documents), q AS (SELECT ws[1] AS t0, ws[4] AS t1 FROM w WHERE doc_id = 0), pa AS (SELECT d.doc_id, unnest(list_filter(range(1, len(d.ws) + 1), i6 -> d.ws[i6] = q.t0)) AS p FROM w d, q), pb AS (SELECT d.doc_id, unnest(list_filter(range(1, len(d.ws) + 1), i7 -> d.ws[i7] = q.t1)) AS p FROM w d, q), na AS (SELECT doc_id, COUNT(*) AS n_a FROM pa GROUP BY 1), nb AS (SELECT doc_id, COUNT(*) AS n_b FROM pb GROUP BY 1), j AS (SELECT pa.doc_id, MIN(abs(pa.p - pb.p)) AS min_dist FROM pa JOIN pb ON pa.doc_id = pb.doc_id GROUP BY 1) SELECT j.doc_id, na.n_a, nb.n_b, CAST(j.min_dist AS BIGINT) AS min_dist FROM j JOIN na ON j.doc_id = na.doc_id JOIN nb ON j.doc_id = nb.doc_id WHERE j.min_dist <= 10 ORDER BY j.doc_id""",
-    // isodow-1 = Spark weekday (0=Monday); both weekofyear are ISO-8601;
-    // the business-day running count replays over the same spine
-    "q303_calendar_dim" ->
-      """WITH b AS (SELECT CAST(MIN(o_orderdate) AS DATE) AS lo, CAST(MAX(o_orderdate) AS DATE) AS hi FROM orders), spine AS (SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE) AS d FROM b), w AS (SELECT d, CAST(isodow(d) - 1 AS BIGINT) AS dow FROM spine) SELECT strftime(d, '%Y-%m-%d') AS date_id, dow, dow >= 5 AS is_weekend, CAST(month(d) AS BIGINT) AS month, CAST(quarter(d) AS BIGINT) AS quarter, CAST(weekofyear(d) AS BIGINT) AS iso_week, CAST(SUM(CASE WHEN dow >= 5 THEN 0 ELSE 1 END) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS business_seq FROM w ORDER BY date_id""",
-    // the exclusive-prefix replay of the streaming state: same cents
-    // grid, same int128 alert inequality, same (sec, event_id) fold order
-    "q300_stream_zscore" ->
-      """WITH e AS (SELECT event_type, event_id, epoch_ns(ts) // 1000000000 AS sec, CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c FROM events), w AS (SELECT event_type, sec, event_id, c, COUNT(*) OVER pre AS n, COALESCE(SUM(c) OVER pre, 0) AS s, COALESCE(SUM(c * c) OVER pre, 0) AS sq FROM e WINDOW pre AS (PARTITION BY event_type ORDER BY sec, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)) SELECT event_type, sec, event_id, c AS value_cents, CAST(n AS BIGINT) AS n_prior FROM w WHERE n >= 30 AND (CAST(n AS HUGEINT) * c - CAST(s AS HUGEINT)) * (CAST(n AS HUGEINT) * c - CAST(s AS HUGEINT)) > 9 * (CAST(n AS HUGEINT) * CAST(sq AS HUGEINT) - CAST(s AS HUGEINT) * CAST(s AS HUGEINT)) ORDER BY event_type, sec, event_id""",
-    // wedge-join triangle count over the same canonical top-60 word graph;
-    // identical 2t/(d(d-1)) arithmetic
-    "q285_clustering_coeff" ->
-      """WITH wds AS (SELECT DISTINCT doc_id, w FROM (SELECT doc_id, unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w FROM documents)), top AS (SELECT w FROM (SELECT w, ROW_NUMBER() OVER (ORDER BY COUNT(*) DESC, w) AS rn FROM wds GROUP BY w) WHERE rn <= 60), dw AS (SELECT doc_id, w FROM wds JOIN top USING (w)), ed AS (SELECT a.w AS u, b.w AS v FROM dw a JOIN dw b ON a.doc_id = b.doc_id AND a.w < b.w GROUP BY 1, 2 HAVING COUNT(*) >= 3), deg AS (SELECT node, COUNT(*) AS degree FROM (SELECT u AS node FROM ed UNION ALL SELECT v FROM ed) GROUP BY 1), tri AS (SELECT node, COUNT(*) AS t FROM (SELECT unnest([e1.u, e1.v, e2.v]) AS node FROM ed e1 JOIN ed e2 ON e1.u = e2.u AND e1.v < e2.v JOIN ed e3 ON e3.u = e1.v AND e3.v = e2.v) GROUP BY 1) SELECT d.node, d.degree, COALESCE(t.t, 0) AS n_triangles, CASE WHEN d.degree >= 2 THEN round(2.0 * CAST(COALESCE(t.t, 0) AS DOUBLE) / (CAST(d.degree AS DOUBLE) * (CAST(d.degree AS DOUBLE) - 1.0)), 6) ELSE 0.0 END AS coeff FROM deg d LEFT JOIN tri t ON t.node = d.node ORDER BY d.node""",
-    // same spine + running last-observed window; the 3-hour limit decides
-    // filled vs gap identically
-    "q286_ffill_limit" ->
-      """WITH hourly AS (SELECT user_id, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS hv FROM events GROUP BY 1, 2), bounds AS (SELECT user_id, MIN(hid) AS lo, MAX(hid) AS hi FROM hourly GROUP BY 1), spine AS (SELECT user_id, unnest(range(lo, hi + 1)) AS hid FROM bounds), j AS (SELECT s.user_id, s.hid, h.hv FROM spine s LEFT JOIN hourly h ON s.user_id = h.user_id AND s.hid = h.hid), w AS (SELECT user_id, hid, hv, last_value(hv IGNORE NULLS) OVER wp AS pv, last_value(CASE WHEN hv IS NOT NULL THEN hid END IGNORE NULLS) OVER wp AS ph FROM j WINDOW wp AS (PARTITION BY user_id ORDER BY hid ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) SELECT user_id, hid, CASE WHEN hv IS NOT NULL THEN 'observed' WHEN hid - ph <= 3 THEN 'filled' ELSE 'gap' END AS status, CASE WHEN hv IS NOT NULL THEN hv WHEN hid - ph <= 3 THEN pv END AS v FROM w ORDER BY user_id, hid""",
-    // the q82 interpolation replay over per-user funnel latencies
-    "q287_funnel_latency" ->
-      s"""WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000000000 AS sec FROM events), sg AS (SELECT user_id, MIN(sec) AS s0 FROM e WHERE event_type = 'signup' GROUP BY 1), buy AS (SELECT e.user_id, sg.s0, MIN(e.sec) AS p0 FROM e JOIN sg ON e.user_id = sg.user_id WHERE e.event_type = 'purchase' AND e.sec >= sg.s0 GROUP BY 1, 2), l AS (SELECT c_mktsegment AS seg, b.user_id, CAST(b.p0 - b.s0 AS DOUBLE) AS lat FROM buy b JOIN customer ON b.user_id = c_custkey), r AS (SELECT seg, lat, ROW_NUMBER() OVER (PARTITION BY seg ORDER BY lat, user_id) AS rn, COUNT(*) OVER (PARTITION BY seg) AS n FROM l) SELECT seg, ${interpSqlCol("0.5", "lat")} AS p50, ${interpSqlCol("0.9", "lat")} AS p90, MAX(n) AS n FROM r GROUP BY seg ORDER BY seg""",
-    // decimal-summed scores and rounded ECE terms: bit-reproducible at
-    // any parallelism, replayed here with the identical op order
-    "q288_calibration_ece" ->
-      """WITH b0 AS (SELECT c_custkey, c_acctbal, CASE WHEN EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) THEN 1 ELSE 0 END AS pos FROM customer), mm AS (SELECT MIN(c_acctbal) AS blo, MAX(c_acctbal) AS bhi FROM b0), s AS (SELECT c_custkey, pos, CAST(round((c_acctbal - blo) / (bhi - blo), 6) AS DECIMAL(12,6)) AS score FROM b0, mm), sb AS (SELECT LEAST(CAST(floor(score * 10) AS BIGINT), 9) AS bin, pos, score FROM s), bins AS (SELECT bin, COUNT(*) AS n, CAST(SUM(pos) AS BIGINT) AS n_pos, SUM(score) AS score_sum FROM sb GROUP BY 1), w AS (SELECT bin, n, n_pos, CAST(score_sum AS DOUBLE) / CAST(n AS DOUBLE) AS mean_score, CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE) AS rate, SUM(n) OVER () AS tot_n FROM bins), t AS (SELECT bin, n, n_pos, mean_score, rate, CAST(round((CAST(n AS DOUBLE) / CAST(tot_n AS DOUBLE)) * abs(rate - mean_score), 9) AS DECIMAL(18,9)) AS term FROM w) SELECT bin, n, n_pos, round(mean_score, 6) AS mean_score, round(rate, 6) AS rate, CAST(SUM(term) OVER () AS DOUBLE) AS ece FROM t ORDER BY bin""",
-    // the absorption recursion replays in pure int64 p9 arithmetic:
-    // identical floor-scaled probabilities, identical 8 unrolled steps
-    "q281_markov_attribution" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000000000 AS sec, event_id FROM events), o AS (SELECT user_id, event_type, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY sec, event_id) AS rn FROM e), fp AS (SELECT user_id, MIN(rn) AS prn FROM o WHERE event_type = 'purchase' GROUP BY 1), p AS (SELECT o.user_id, o.event_type, o.rn FROM o LEFT JOIN fp USING (user_id) WHERE fp.prn IS NULL OR o.rn <= fp.prn), st AS (SELECT 'start' AS src, event_type AS dst FROM p WHERE rn = 1), sq AS (SELECT event_type AS src, lead(event_type, 1) OVER (PARTITION BY user_id ORDER BY rn) AS nxt FROM p), tr0 AS (SELECT src, CASE WHEN nxt IS NOT NULL THEN nxt WHEN src <> 'purchase' THEN 'drop' ELSE NULL END AS dst FROM sq UNION ALL SELECT src, dst FROM st), cnt AS (SELECT src, CASE WHEN dst = 'purchase' THEN 'conv' ELSE dst END AS dst, COUNT(*) AS n FROM tr0 WHERE dst IS NOT NULL GROUP BY 1, 2), tot AS (SELECT src, SUM(n) AS nt FROM cnt GROUP BY 1), pm AS (SELECT c.src, c.dst, (c.n * 1000000000) // t.nt AS p9 FROM cnt c JOIN tot t ON c.src = t.src), scen AS (SELECT * FROM (VALUES ('__base__'), ('click'), ('signup'), ('view'), ('error')) v(scenario)), tm AS MATERIALIZED (SELECT sc.scenario, p.src, p.dst, p.p9 FROM scen sc JOIN pm p ON sc.scenario = '__base__' OR (p.src <> sc.scenario AND p.dst <> sc.scenario)), stt AS (SELECT DISTINCT scenario, src AS state FROM tm), cv AS (SELECT scenario, src AS state, p9 FROM tm WHERE dst = 'conv'), v0 AS MATERIALIZED (SELECT s.scenario, s.state, COALESCE(c.p9, 0) AS v FROM stt s LEFT JOIN cv c ON c.scenario = s.scenario AND c.state = s.state), v1 AS MATERIALIZED (SELECT s.scenario, s.state, COALESCE(MAX(c.p9), 0) + (COALESCE(SUM(t.p9 * pv.v), 0) // 1000000000) AS v FROM stt s LEFT JOIN cv c ON c.scenario = s.scenario AND c.state = s.state LEFT JOIN tm t ON t.scenario = s.scenario AND t.src = s.state AND t.dst NOT IN ('conv', 'drop') LEFT JOIN v0 pv ON pv.scenario = s.scenario AND pv.state = t.dst GROUP BY s.scenario, s.state), v2 AS MATERIALIZED (SELECT s.scenario, s.state, COALESCE(MAX(c.p9), 0) + (COALESCE(SUM(t.p9 * pv.v), 0) // 1000000000) AS v FROM stt s LEFT JOIN cv c ON c.scenario = s.scenario AND c.state = s.state LEFT JOIN tm t ON t.scenario = s.scenario AND t.src = s.state AND t.dst NOT IN ('conv', 'drop') LEFT JOIN v1 pv ON pv.scenario = s.scenario AND pv.state = t.dst GROUP BY s.scenario, s.state), v3 AS MATERIALIZED (SELECT s.scenario, s.state, COALESCE(MAX(c.p9), 0) + (COALESCE(SUM(t.p9 * pv.v), 0) // 1000000000) AS v FROM stt s LEFT JOIN cv c ON c.scenario = s.scenario AND c.state = s.state LEFT JOIN tm t ON t.scenario = s.scenario AND t.src = s.state AND t.dst NOT IN ('conv', 'drop') LEFT JOIN v2 pv ON pv.scenario = s.scenario AND pv.state = t.dst GROUP BY s.scenario, s.state), v4 AS MATERIALIZED (SELECT s.scenario, s.state, COALESCE(MAX(c.p9), 0) + (COALESCE(SUM(t.p9 * pv.v), 0) // 1000000000) AS v FROM stt s LEFT JOIN cv c ON c.scenario = s.scenario AND c.state = s.state LEFT JOIN tm t ON t.scenario = s.scenario AND t.src = s.state AND t.dst NOT IN ('conv', 'drop') LEFT JOIN v3 pv ON pv.scenario = s.scenario AND pv.state = t.dst GROUP BY s.scenario, s.state), v5 AS MATERIALIZED (SELECT s.scenario, s.state, COALESCE(MAX(c.p9), 0) + (COALESCE(SUM(t.p9 * pv.v), 0) // 1000000000) AS v FROM stt s LEFT JOIN cv c ON c.scenario = s.scenario AND c.state = s.state LEFT JOIN tm t ON t.scenario = s.scenario AND t.src = s.state AND t.dst NOT IN ('conv', 'drop') LEFT JOIN v4 pv ON pv.scenario = s.scenario AND pv.state = t.dst GROUP BY s.scenario, s.state), v6 AS MATERIALIZED (SELECT s.scenario, s.state, COALESCE(MAX(c.p9), 0) + (COALESCE(SUM(t.p9 * pv.v), 0) // 1000000000) AS v FROM stt s LEFT JOIN cv c ON c.scenario = s.scenario AND c.state = s.state LEFT JOIN tm t ON t.scenario = s.scenario AND t.src = s.state AND t.dst NOT IN ('conv', 'drop') LEFT JOIN v5 pv ON pv.scenario = s.scenario AND pv.state = t.dst GROUP BY s.scenario, s.state), v7 AS MATERIALIZED (SELECT s.scenario, s.state, COALESCE(MAX(c.p9), 0) + (COALESCE(SUM(t.p9 * pv.v), 0) // 1000000000) AS v FROM stt s LEFT JOIN cv c ON c.scenario = s.scenario AND c.state = s.state LEFT JOIN tm t ON t.scenario = s.scenario AND t.src = s.state AND t.dst NOT IN ('conv', 'drop') LEFT JOIN v6 pv ON pv.scenario = s.scenario AND pv.state = t.dst GROUP BY s.scenario, s.state), v8 AS MATERIALIZED (SELECT s.scenario, s.state, COALESCE(MAX(c.p9), 0) + (COALESCE(SUM(t.p9 * pv.v), 0) // 1000000000) AS v FROM stt s LEFT JOIN cv c ON c.scenario = s.scenario AND c.state = s.state LEFT JOIN tm t ON t.scenario = s.scenario AND t.src = s.state AND t.dst NOT IN ('conv', 'drop') LEFT JOIN v7 pv ON pv.scenario = s.scenario AND pv.state = t.dst GROUP BY s.scenario, s.state), fin AS (SELECT scenario, v FROM v8 WHERE state = 'start'), b AS (SELECT v AS vb FROM fin WHERE scenario = '__base__'), re AS (SELECT f.scenario AS channel, b.vb - f.v AS re9, b.vb FROM fin f, b WHERE f.scenario <> '__base__'), ts_ AS (SELECT SUM(re9) AS t9 FROM re) SELECT channel, round(CAST(re9 AS DOUBLE) / CAST(vb AS DOUBLE), 6) AS removal_effect, round(CAST(re9 AS DOUBLE) / CAST(t9 AS DOUBLE), 6) AS attribution FROM re, ts_ ORDER BY channel""",
-    // the same greedy fold, sorted per key, first element always kept
-    "q282_debounce" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000000000 AS sec FROM events), g AS (SELECT user_id, event_type, list_sort(list(sec)) AS ss FROM e GROUP BY 1, 2), k AS (SELECT user_id, event_type, list_reduce(list_transform(ss, x -> [x]), (a, x) -> CASE WHEN x[1] >= a[-1] + 600 THEN list_append(a, x[1]) ELSE a END) AS kept FROM g) SELECT user_id, event_type, unnest(kept) AS kept_sec FROM k ORDER BY user_id, event_type, kept_sec""",
-    // md5 bucket assignment and the pooled two-proportion z replayed
-    // op-for-op from exact integer counts
-    "q283_ab_ztest" ->
-      """WITH a AS (SELECT CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS conv, CAST(concat('0x', substr(md5(concat('ab1:', CAST(event_id AS VARCHAR))), 1, 13)) AS BIGINT) % 2 AS arm FROM events), g AS (SELECT CAST(SUM(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a, CAST(SUM(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b, CAST(SUM(CASE WHEN arm = 0 THEN conv ELSE 0 END) AS BIGINT) AS conv_a, CAST(SUM(CASE WHEN arm = 1 THEN conv ELSE 0 END) AS BIGINT) AS conv_b FROM a) SELECT n_a, n_b, conv_a, conv_b, round(CAST(conv_a AS DOUBLE) / CAST(n_a AS DOUBLE), 6) AS rate_a, round(CAST(conv_b AS DOUBLE) / CAST(n_b AS DOUBLE), 6) AS rate_b, round((CAST(conv_a AS DOUBLE) / CAST(n_a AS DOUBLE) - CAST(conv_b AS DOUBLE) / CAST(n_b AS DOUBLE)) / sqrt((CAST(conv_a + conv_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE)) * (1.0 - CAST(conv_a + conv_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE)) * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE))), 6) AS z FROM g""",
-    // the drained update-mode emissions must equal the batch greedy fold
-    // at the 900 s gap — cross-batch state carry included
-    "q284_stream_debounce" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000000000 AS sec FROM events), g AS (SELECT user_id, event_type, list_sort(list(sec)) AS ss FROM e GROUP BY 1, 2), k AS (SELECT user_id, event_type, list_reduce(list_transform(ss, x -> [x]), (a, x) -> CASE WHEN x[1] >= a[-1] + 900 THEN list_append(a, x[1]) ELSE a END) AS kept FROM g) SELECT user_id, event_type, unnest(kept) AS kept_sec FROM k ORDER BY user_id, event_type, kept_sec""",
-    // running max over the same per-user arrival order on both engines;
-    // exact integer lateness and bucket counts
-    "q276_lateness_audit" ->
-      """WITH e AS (SELECT user_id, event_type, event_id, epoch_ns(ts) // 1000000000 AS sec, md5(CAST(event_id AS VARCHAR)) AS arr FROM events), l AS (SELECT event_type, MAX(sec) OVER (PARTITION BY user_id ORDER BY arr, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - sec AS lateness FROM e) SELECT event_type, CASE WHEN lateness = 0 THEN 'a_on_time' WHEN lateness < 60 THEN 'b_lt_1m' WHEN lateness < 3600 THEN 'c_lt_1h' ELSE 'd_ge_1h' END AS bucket, COUNT(*) AS n, MAX(lateness) AS max_lateness FROM l GROUP BY 1, 2 ORDER BY 1, 2""",
-    // per-rank OLS terms rounded to 9 decimals and decimal-summed (the
-    // q256 discipline), then the identical closed-form slope/intercept
-    "q277_zipf_fit" ->
-      """WITH w AS (SELECT unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w FROM documents), c AS (SELECT w, COUNT(*) AS cnt FROM w GROUP BY 1), r AS (SELECT cnt, ROW_NUMBER() OVER (ORDER BY cnt DESC, w) AS rn FROM c QUALIFY rn <= 500), t AS (SELECT CAST(round(ln(CAST(rn AS DOUBLE)), 9) AS DECIMAL(18,9)) AS tx, CAST(round(ln(CAST(cnt AS DOUBLE)), 9) AS DECIMAL(18,9)) AS ty, CAST(round(ln(CAST(rn AS DOUBLE)) * ln(CAST(rn AS DOUBLE)), 9) AS DECIMAL(18,9)) AS txx, CAST(round(ln(CAST(rn AS DOUBLE)) * ln(CAST(cnt AS DOUBLE)), 9) AS DECIMAL(18,9)) AS txy FROM r), a AS (SELECT COUNT(*) AS n, SUM(tx) AS sx, SUM(ty) AS sy, SUM(txx) AS sxx, SUM(txy) AS sxy FROM t) SELECT n, round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6) AS slope, round((CAST(sy AS DOUBLE) - ((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))) * CAST(sx AS DOUBLE)) / CAST(n AS DOUBLE), 6) AS intercept FROM a""",
-    // src = thirds 0∪2; clone = thirds 0∪1 minus status F — the two
-    // divergent evolutions must both read back exactly
-    "q278_lake_clone" ->
-      """WITH o AS (SELECT o_orderkey, o_orderstatus, CAST(o_totalprice AS DECIMAL(18,2)) AS price FROM orders) SELECT 'src' AS side, o_orderstatus, COUNT(*) AS n, CAST(SUM(price) AS DOUBLE) AS total FROM o WHERE o_orderkey % 3 IN (0, 2) GROUP BY 2 UNION ALL SELECT 'clone', o_orderstatus, COUNT(*), CAST(SUM(price) AS DOUBLE) FROM o WHERE o_orderkey % 3 IN (0, 1) AND o_orderstatus <> 'F' GROUP BY 2 ORDER BY side, o_orderstatus""",
-    // two leads over the identical (sec, event_id) per-user order
-    "q279_seq_trigrams" ->
-      """WITH e AS (SELECT user_id, event_type, epoch_ns(ts) // 1000000000 AS sec, event_id FROM events), t AS (SELECT event_type AS t1, lead(event_type, 1) OVER w AS t2, lead(event_type, 2) OVER w AS t3 FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)) SELECT t1, t2, t3, COUNT(*) AS n FROM t WHERE t3 IS NOT NULL GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-    // read-back equals the day-patched aggregate: middle day doubled,
-    // every other day untouched — same integer day arithmetic
-    "q280_replace_where" ->
-      """WITH e AS (SELECT event_type, CAST(value AS DECIMAL(18,2)) AS v, epoch_ns(ts) // 1000000000 // 86400 AS day FROM events), b AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM e) SELECT event_type, COUNT(*) AS n, CAST(SUM(CASE WHEN day = lo + (hi - lo) // 2 THEN CAST(v * 2 AS DECIMAL(18,2)) ELSE v END) AS DOUBLE) AS total FROM e, b GROUP BY 1 ORDER BY 1""",
-    // per-decile lift from exact integer counts; ntile tie-break order is
-    // the same total order on both engines
-    "q272_decile_lift" ->
-      """WITH b AS (SELECT c_custkey, c_acctbal, CASE WHEN EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey) THEN 1 ELSE 0 END AS pos FROM customer), d AS (SELECT *, CAST(ntile(10) OVER (ORDER BY c_acctbal DESC, c_custkey) AS BIGINT) AS decile FROM b), p AS (SELECT decile, COUNT(*) AS n, CAST(SUM(pos) AS BIGINT) AS n_pos FROM d GROUP BY 1), c AS (SELECT decile, n, n_pos, SUM(n) OVER wc AS cum_n, SUM(n_pos) OVER wc AS cum_pos, SUM(n) OVER () AS tot_n, SUM(n_pos) OVER () AS tot_pos FROM p WINDOW wc AS (ORDER BY decile ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) SELECT decile, n, n_pos, round(CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE), 6) AS pos_rate, round((CAST(cum_pos AS DOUBLE) / CAST(cum_n AS DOUBLE)) / (CAST(tot_pos AS DOUBLE) / CAST(tot_n AS DOUBLE)), 6) AS cum_lift FROM c ORDER BY decile""",
-    // longest path into each node of the divisor DAG via a recursive walk
-    // from every node; the engine's bounded max-plus rounds reach the same
-    // fixpoint (DAG depth << round budget)
-    "q273_topo_layers" ->
-      """WITH RECURSIVE n AS (SELECT p_partkey AS k FROM part WHERE p_partkey >= 1), ed AS (SELECT a.k AS src, b.k AS dst FROM n a JOIN n b ON b.k = a.k * 2 UNION ALL SELECT a.k, b.k FROM n a JOIN n b ON b.k = a.k * 3), walk(node, len) AS (SELECT k, 0 FROM n UNION SELECT e.dst, w.len + 1 FROM walk w JOIN ed e ON e.src = w.node) SELECT node, CAST(MAX(len) AS BIGINT) AS layer FROM walk GROUP BY 1 ORDER BY 1""",
-    // the oracle derives every (path, type, count) row independently from
-    // the relational columns — an external expectation, not a replay
-    "q274_json_schema_infer" ->
-      """WITH rows_ AS (SELECT 'events' AS src, 'k' AS path, 'long' AS vtype, (SELECT COUNT(*) FROM events) AS n, (SELECT COUNT(*) FROM events) AS tot UNION ALL SELECT 'orders', 'key', 'long', (SELECT COUNT(*) FROM orders), (SELECT COUNT(*) FROM orders) UNION ALL SELECT 'orders', 'price', 'double', (SELECT COUNT(*) FROM orders), (SELECT COUNT(*) FROM orders) UNION ALL SELECT 'orders', 'status', 'string', (SELECT COUNT(*) FROM orders), (SELECT COUNT(*) FROM orders) UNION ALL SELECT 'orders', 'prio', 'string', (SELECT COUNT(*) FROM orders WHERE o_orderkey % 5 <> 0), (SELECT COUNT(*) FROM orders) UNION ALL SELECT 'orders', 'prio', 'null', (SELECT COUNT(*) FROM orders WHERE o_orderkey % 5 = 0), (SELECT COUNT(*) FROM orders) UNION ALL SELECT 'orders', 'flag', 'bool', (SELECT COUNT(*) FROM orders), (SELECT COUNT(*) FROM orders)) SELECT src, path, vtype, n, round(CAST(n AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS coverage FROM rows_ ORDER BY src, path, vtype""",
-    // exact integer token/type/hapax counts over the canonical word split
-    "q275_lexical_diversity" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w FROM documents), c AS (SELECT doc_id, w, COUNT(*) AS c FROM w GROUP BY 1, 2) SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_tokens, COUNT(*) AS n_types, CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax, round(CAST(COUNT(*) AS DOUBLE) / CAST(SUM(c) AS DOUBLE), 6) AS ttr, round(CAST(SUM(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS hapax_ratio FROM c GROUP BY doc_id ORDER BY doc_id""",
-    // the hashing trick replays exactly: md5 bucket + modular sign bit,
-    // integer-only arithmetic, zero entries dropped on both engines
-    "q271_feature_hash" ->
-      """WITH f AS (SELECT c_custkey, concat('seg:', c_mktsegment) AS feat FROM customer UNION ALL SELECT c_custkey, concat('nat:', CAST(c_nationkey AS VARCHAR)) FROM customer UNION ALL SELECT c_custkey, concat('bal:', CAST(CAST(floor(c_acctbal / 1000) AS BIGINT) AS VARCHAR)) FROM customer), h AS (SELECT c_custkey, CAST(concat('0x', substr(md5(feat), 1, 13)) AS BIGINT) AS h FROM f), s AS (SELECT c_custkey, h % 16 AS idx, CASE WHEN h % 32 >= 16 THEN 1 ELSE -1 END AS sign FROM h) SELECT c_custkey, idx, CAST(SUM(sign) AS BIGINT) AS val FROM s GROUP BY 1, 2 HAVING SUM(sign) <> 0 ORDER BY c_custkey, idx""",
-    // a three-format federation of disjoint thirds must equal the plain
-    // aggregate: every leg is lossless for long/string/double
-    "q266_federated_union" ->
-      s"""SELECT event_type, COUNT(*) AS n, $SUMV AS total_value FROM events GROUP BY event_type ORDER BY event_type""",
-    // the metadata-only drop must equal the plain day filter; the tertile
-    // boundary replays as the same integer arithmetic
-    "q265_retention_drop" ->
-      s"""WITH d AS (SELECT event_type, value, epoch_ns(ts) // 1000000000 // 86400 AS day FROM events), b AS (SELECT MIN(day) AS lo, MAX(day) AS hi FROM d) SELECT event_type, COUNT(*) AS n, $SUMV AS total_value FROM d, b WHERE day > lo + (hi - lo) // 3 GROUP BY 1 ORDER BY 1""",
-    // largest-remainder quotas replay as the identical integer arithmetic;
-    // md5-ring rank makes the per-row assignment engine-deterministic
-    "q264_exact_split" ->
-      """WITH d AS (SELECT doc_id, lang, md5(CAST(doc_id AS VARCHAR)) AS hx FROM documents), r AS (SELECT doc_id, lang, ROW_NUMBER() OVER (PARTITION BY lang ORDER BY hx, doc_id) AS rn FROM d), n AS (SELECT lang, COUNT(*) AS n FROM d GROUP BY 1), sp AS (SELECT * FROM (VALUES (0, 'train', 80), (1, 'val', 10), (2, 'test', 10)) AS t(idx, split, w)), q0 AS (SELECT n.lang, n.n, sp.idx, sp.split, sp.w, (n.n * sp.w) // 100 AS base, (n.n * sp.w) % 100 AS rem FROM n, sp), q1 AS (SELECT *, n - SUM(base) OVER (PARTITION BY lang) AS leftover, ROW_NUMBER() OVER (PARTITION BY lang ORDER BY rem DESC, idx) AS erk FROM q0), q2 AS (SELECT lang, idx, split, base + CASE WHEN erk <= leftover THEN 1 ELSE 0 END AS quota FROM q1), q3 AS (SELECT lang, split, quota, SUM(quota) OVER (PARTITION BY lang ORDER BY idx ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS hi FROM q2), b AS (SELECT lang, split, hi - quota AS lo, hi FROM q3) SELECT r.doc_id, r.lang, b.split FROM r JOIN b ON r.lang = b.lang AND r.rn > b.lo AND r.rn <= b.hi ORDER BY r.doc_id""",
-    // same normalized word split as q156; OOV = absence from the top-1000
-    // by (count desc, word asc); rates from exact integer counts
-    "q262_oov_rate" ->
-      """WITH w AS (SELECT doc_id, lang, unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w FROM documents), c AS (SELECT w, COUNT(*) AS cnt FROM w GROUP BY 1), v AS (SELECT w FROM (SELECT w, ROW_NUMBER() OVER (ORDER BY cnt DESC, w) AS rn FROM c) WHERE rn <= 1000) SELECT lang, COUNT(DISTINCT doc_id) AS n_docs, COUNT(*) AS n_tokens, CAST(SUM(CASE WHEN v.w IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov, round(CAST(SUM(CASE WHEN v.w IS NULL THEN 1 ELSE 0 END) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS oov_rate FROM w LEFT JOIN v ON w.w = v.w GROUP BY lang ORDER BY lang""",
-    // only the audited batches are visible: thirds 0 (direct) and 1
-    // (published); the poisoned third 2 fails its audit and never lands
-    "q263_wap_publish" ->
-      """SELECT o_orderstatus, COUNT(*) AS n, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total FROM orders WHERE o_orderkey % 3 IN (0, 1) GROUP BY 1 ORDER BY 1""",
-    // the Holt recursion replays as a recursive CTE in the identical IEEE
-    // op order (s recomputed inside b on both engines)
-    "q261_holt" ->
-      """WITH RECURSIVE h AS (SELECT user_id, epoch_ns(ts) // 1000000000 // 3600 AS hid, CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS DOUBLE) AS v FROM events GROUP BY 1, 2), o AS (SELECT user_id, v, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY hid) AS rn FROM h), nn AS (SELECT user_id, COUNT(*) AS n FROM o GROUP BY 1), rec AS (SELECT a.user_id, CAST(2 AS BIGINT) AS rn, b.v AS s, b.v - a.v AS b FROM o a JOIN o b ON a.user_id = b.user_id AND a.rn = 1 AND b.rn = 2 UNION ALL SELECT r.user_id, r.rn + 1, 0.5 * x.v + 0.5 * (r.s + r.b) AS s, 0.5 * ((0.5 * x.v + 0.5 * (r.s + r.b)) - r.s) + 0.5 * r.b AS b FROM rec r JOIN o x ON x.user_id = r.user_id AND x.rn = r.rn + 1) SELECT f.user_id, nn.n, round(f.s, 6) AS level, round(f.b, 6) AS trend, round(f.s + f.b, 6) AS forecast FROM rec f JOIN nn ON nn.user_id = f.user_id AND f.rn = nn.n WHERE nn.n >= 2 ORDER BY f.user_id""",
-    // the converged CDC-with-deletes table = latest event per user minus
-    // tombstoned users; batch slicing must be invisible
-    "q259_stream_cdc_deletes" ->
-      """SELECT user_id, event_id, event_type, value, sec FROM (SELECT user_id, event_id, event_type, value, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY CAST(epoch_ns(ts) // 1000000000 AS BIGINT) DESC, event_id DESC) AS rn FROM events) WHERE rn = 1 AND event_type <> 'error' ORDER BY user_id""",
-    // the KMV Jaccard estimator replays hash-for-hash: same md5-derived
-    // 52-bit space, same k-smallest-of-union membership counting
-    "q260_kmv_jaccard" ->
-      """WITH h AS (SELECT DISTINCT event_type AS g, CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 13)) AS BIGINT) AS h FROM events), r AS (SELECT g, h, ROW_NUMBER() OVER (PARTITION BY g ORDER BY h) AS rn FROM h), mins AS (SELECT g, h FROM r WHERE rn <= 64), gs AS (SELECT DISTINCT g FROM mins), pairs AS (SELECT a.g AS ga, b.g AS gb FROM gs a JOIN gs b ON a.g < b.g), u AS (SELECT ga, gb, h, MAX(in_a) AS in_a, MAX(in_b) AS in_b FROM (SELECT p.ga, p.gb, m.h, 1 AS in_a, 0 AS in_b FROM pairs p JOIN mins m ON m.g = p.ga UNION ALL SELECT p.ga, p.gb, m.h, 0, 1 FROM pairs p JOIN mins m ON m.g = p.gb) GROUP BY 1, 2, 3), ks AS (SELECT ga, gb, in_a, in_b, ROW_NUMBER() OVER (PARTITION BY ga, gb ORDER BY h) AS rn FROM u) SELECT ga, gb, COUNT(*) AS kk, CAST(SUM(in_a * in_b) AS BIGINT) AS n_both, round(CAST(SUM(in_a * in_b) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS jaccard_est FROM ks WHERE rn <= 64 GROUP BY 1, 2 ORDER BY ga, gb""",
-    // an Avro round-trip is lossless for long/string/double, so the
-    // read-back aggregate equals the plain aggregate
-    "q258_avro_roundtrip" ->
-      s"""SELECT event_type, COUNT(*) AS n, $SUMV AS total_value FROM events GROUP BY event_type ORDER BY event_type""",
-    // one CDC batch = matched deletes + matched updates + inserts; the
-    // absent-key delete replays as nothing on both engines
-    "q257_merge_cdc" ->
-      """SELECT c_custkey, CAST(CASE WHEN c_custkey % 5 = 0 THEN 0.00 ELSE CAST(c_acctbal AS DECIMAL(12,2)) END AS DOUBLE) AS bal FROM customer WHERE c_custkey <= 500 AND c_custkey % 7 <> 0 UNION ALL SELECT k, 1.0 FROM range(10001, 10006) t(k) ORDER BY c_custkey""",
-    "q256_mutual_info" ->
-      """WITH j AS (SELECT o_orderstatus AS x, o_orderpriority AS y, COUNT(*) AS n_xy FROM orders GROUP BY 1, 2), t AS (SELECT x, y, n_xy, CAST(SUM(n_xy) OVER (PARTITION BY x) AS BIGINT) AS n_x, CAST(SUM(n_xy) OVER (PARTITION BY y) AS BIGINT) AS n_y, CAST(SUM(n_xy) OVER () AS BIGINT) AS n FROM j), m AS (SELECT x, y, n_xy, n_x, n_y, CAST(round(CAST(n_xy AS DOUBLE) / CAST(n AS DOUBLE) * ln(CAST(n_xy AS DOUBLE) * CAST(n AS DOUBLE) / (CAST(n_x AS DOUBLE) * CAST(n_y AS DOUBLE))), 9) AS DECIMAL(18,9)) AS mi_term FROM t) SELECT x, y, n_xy, n_x, n_y, CAST(mi_term AS DOUBLE) AS mi_term, CAST(SUM(mi_term) OVER () AS DOUBLE) AS mi_total FROM m ORDER BY x, y""",
-    "q254_subtree_rollup" ->
-      """WITH RECURSIVE anc AS (SELECT c_custkey AS id, c_custkey AS anc, CAST(0 AS BIGINT) AS depth FROM customer UNION ALL SELECT a.id, n.c_custkey // 10 AS anc, a.depth + 1 FROM anc a JOIN customer n ON a.anc = n.c_custkey WHERE n.c_custkey >= 10) SELECT a.anc AS node, COUNT(*) AS n_nodes, MAX(a.depth) AS subtree_depth, CAST(SUM(CAST(v.c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS subtree_total FROM anc a JOIN customer v ON a.id = v.c_custkey GROUP BY 1 ORDER BY node""",
-    // hidden partitioning only changes WHICH files are read, never what
-    // the query returns — the oracle is the raw filter
-    "q239_hidden_partitioning" ->
-      s"""SELECT event_type, COUNT(*) AS n, $SUMV AS total_value FROM events WHERE user_id = 7 GROUP BY event_type ORDER BY event_type""",
-    // tx-time membership = the first two ingest thirds; valid-time = the
-    // latest order on or before the as-of date
-    "q240_bitemporal" ->
-      """WITH o AS (SELECT o_orderkey, o_custkey, o_orderdate AS vd, o_totalprice FROM orders WHERE o_orderkey % 3 IN (0, 1)), r AS (SELECT o_custkey, vd, o_orderkey, o_totalprice, ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY vd DESC, o_orderkey DESC) AS rn FROM o WHERE vd <= '1996-01-01') SELECT o_custkey, vd AS valid_from, o_orderkey, o_totalprice FROM r WHERE rn = 1 ORDER BY o_custkey""",
-    // three synchronous rounds unroll as three CTEs; mode + smallest-label
-    // tie-break makes every round deterministic on both engines
-    "q238_label_prop" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem), e0 AS (SELECT a.pk AS u, b.pk AS v FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk GROUP BY 1, 2 HAVING COUNT(*) >= 2), e AS (SELECT u AS src, v AS dst FROM e0 UNION ALL SELECT v, u FROM e0), l0 AS (SELECT DISTINCT src AS pk, src AS label FROM e), r1 AS (SELECT pk, label FROM (SELECT e.src AS pk, l.label, ROW_NUMBER() OVER (PARTITION BY e.src ORDER BY COUNT(*) DESC, l.label) AS rn FROM e JOIN l0 l ON e.dst = l.pk GROUP BY e.src, l.label) WHERE rn = 1), r2 AS (SELECT pk, label FROM (SELECT e.src AS pk, l.label, ROW_NUMBER() OVER (PARTITION BY e.src ORDER BY COUNT(*) DESC, l.label) AS rn FROM e JOIN r1 l ON e.dst = l.pk GROUP BY e.src, l.label) WHERE rn = 1), r3 AS (SELECT pk, label FROM (SELECT e.src AS pk, l.label, ROW_NUMBER() OVER (PARTITION BY e.src ORDER BY COUNT(*) DESC, l.label) AS rn FROM e JOIN r2 l ON e.dst = l.pk GROUP BY e.src, l.label) WHERE rn = 1) SELECT pk, label FROM r3 ORDER BY pk""",
-    // per-word JSD terms hit the 9-decimal grid before ranking; both
-    // engines order by the rounded contribution then the word
-    "q236_corpus_drift" ->
-      s"""$HASH_MACROS; WITH w AS (SELECT doc_id % 2 AS half, unnest(docwords(text)) AS w FROM documents), c AS (SELECT w, CAST(COUNT(*) FILTER (half = 0) AS BIGINT) AS c0, CAST(COUNT(*) FILTER (half = 1) AS BIGINT) AS c1 FROM w GROUP BY w), t AS (SELECT CAST(SUM(c0) AS DOUBLE) AS n0, CAST(SUM(c1) AS DOUBLE) AS n1 FROM c) SELECT w, c0, c1, round(0.5 * (CASE WHEN c0 > 0 THEN (c0/n0) * ln(2.0*(c0/n0)/((c0/n0)+(c1/n1))) ELSE 0.0 END + CASE WHEN c1 > 0 THEN (c1/n1) * ln(2.0*(c1/n1)/((c0/n0)+(c1/n1))) ELSE 0.0 END), 9) AS jsd_contrib FROM c, t ORDER BY jsd_contrib DESC, w LIMIT 20""",
-    // the aHash replays cell-by-cell in hex space (q229's pattern); bands,
-    // bucket join and Hamming verify are the same integer arithmetic
-    "q237_phash_dedup" ->
-      """WITH p0 AS (SELECT doc_id, hex(encode(text)) AS hx FROM documents), p AS (SELECT doc_id, hx, CAST(length(hx) // 2 AS BIGINT) AS len FROM p0 WHERE length(hx) // 2 >= 64), cl AS (SELECT doc_id, list_transform(range(0, 64), i -> CAST(list_reduce(list_prepend(0, list_transform(range(len * i // 64, len * (i+1) // 64), j -> CAST(concat('0x', substring(hx, CAST(j * 2 + 1 AS BIGINT), 2)) AS BIGINT))), (a, b) -> a + b) AS BIGINT)) AS cells FROM p), ct AS (SELECT doc_id, cells, CAST(list_reduce(cells, (a, b) -> a + b) AS BIGINT) AS total FROM cl), bd AS (SELECT doc_id, list_transform(range(0, 4), k -> CAST(list_reduce(list_prepend(0, list_transform(range(0, 16), b -> CASE WHEN cells[CAST(k*16+b+1 AS BIGINT)] * 64 > total THEN CAST(1 << b AS BIGINT) ELSE 0 END)), (a, c) -> a + c) AS BIGINT)) AS bands FROM ct), ev AS (SELECT doc_id, bands, k, bands[CAST(k+1 AS BIGINT)] AS bv FROM (SELECT doc_id, bands, unnest(range(0,4)) AS k FROM bd)), pr AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b, a.bands AS ba, b.bands AS bb FROM ev a JOIN ev b ON a.k = b.k AND a.bv = b.bv AND a.doc_id < b.doc_id), h AS (SELECT id_a, id_b, CAST(bit_count(xor(ba[1], bb[1])) + bit_count(xor(ba[2], bb[2])) + bit_count(xor(ba[3], bb[3])) + bit_count(xor(ba[4], bb[4])) AS BIGINT) AS hamming FROM pr) SELECT id_a, id_b, hamming FROM h WHERE hamming <= 10 ORDER BY id_a, id_b""",
-    // the hour spine regenerates from the same [min,max] bounds, so the
-    // gap islands replay as the identical anti-join + window
-    "q233_gap_detect" -> gapDetectOracleSql,
-    // the streaming hour store is union-folded (commutative, idempotent),
-    // so the drained state feeds the exact batch-audit oracle
-    "q242_stream_gap_monitor" -> gapDetectOracleSql,
-    // lexicon hits replay as a literal IN-list; flag threshold applies to
-    // the 6-rounded ratio on both engines
-    "q241_lexicon_flags" ->
-      s"""$HASH_MACROS; WITH w AS (SELECT doc_id, unnest(docwords(text)) AS w FROM documents), a AS (SELECT doc_id, COUNT(*) AS n_tokens, CAST(COUNT(*) FILTER (w IN ('dup','fast','slow')) AS BIGINT) AS n_hits, CAST(COUNT(DISTINCT w) FILTER (w IN ('dup','fast','slow')) AS BIGINT) AS n_terms FROM w GROUP BY doc_id), b AS (SELECT doc_id, n_tokens, n_hits, n_terms, round(CAST(n_hits AS DOUBLE) / n_tokens, 6) AS hit_ratio FROM a) SELECT doc_id, n_tokens, n_hits, n_terms, hit_ratio, CAST(CASE WHEN hit_ratio > 0.01 THEN 1 ELSE 0 END AS BIGINT) AS flagged FROM b ORDER BY doc_id""",
-    // q82's exact-interpolation replay over the synthesized integer delays
-    "q234_lag_profile" ->
-      s"""WITH d AS (SELECT event_type, event_id, CAST((event_id * 37) % 1800 AS DOUBLE) AS delay_s FROM events), r AS (SELECT event_type, delay_s, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY delay_s, event_id) AS rn, COUNT(*) OVER (PARTITION BY event_type) AS n FROM d) SELECT event_type, ${lagInterpSql("0.5")} AS p50_lag, ${lagInterpSql("0.95")} AS p95_lag, MAX(delay_s) AS max_lag, MAX(n) AS n FROM r GROUP BY event_type ORDER BY event_type""",
-    // grams regenerate positionally from the same normalized split; span
-    // union replays as the same fixed-length interval-merge islands
-    "q235_span_dedup" ->
-      """WITH wl AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS ws FROM documents), f AS (SELECT doc_id, len(ws) AS n, ws, unnest(range(0, len(ws)-7)) AS pos FROM wl WHERE len(ws) >= 8), g AS (SELECT doc_id, n, CAST(pos AS BIGINT) AS pos, array_to_string(ws[pos+1:pos+8], ' ') AS g FROM f), c AS (SELECT g, COUNT(*) AS cnt FROM g GROUP BY g), d AS (SELECT doc_id, n, pos FROM g JOIN c USING (g) WHERE cnt >= 2), isl AS (SELECT doc_id, n, pos, CASE WHEN pos - lag(pos) OVER (PARTITION BY doc_id ORDER BY pos) <= 7 THEN 0 ELSE 1 END AS brk FROM d), gi AS (SELECT doc_id, n, pos, SUM(brk) OVER (PARTITION BY doc_id ORDER BY pos ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl_id FROM isl), seg AS (SELECT doc_id, isl_id, ANY_VALUE(n) AS n, COUNT(*) AS n_gr, MAX(pos) - MIN(pos) + 8 AS cov FROM gi GROUP BY doc_id, isl_id) SELECT doc_id, CAST(MAX(n) AS BIGINT) AS n_tokens, CAST(SUM(n_gr) AS BIGINT) AS n_dup_grams, CAST(SUM(cov) AS BIGINT) AS covered_tokens, round(CAST(SUM(cov) AS DOUBLE) / MAX(n), 6) AS dup_ratio FROM seg GROUP BY doc_id ORDER BY doc_id""",
-    // q194's grid-then-decimal-sum discipline over bigram transitions;
-    // the BOS sentinel makes every doc's first word a scored transition
-    "q231_bigram_surprisal" ->
-      """WITH wl AS (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS ws FROM documents), w AS (SELECT doc_id, unnest(ws) AS w, generate_subscripts(ws, 1) AS pos FROM wl), b AS (SELECT doc_id, coalesce(lag(w) OVER (PARTITION BY doc_id ORDER BY pos), '<s>') AS prev, w FROM w), cp AS (SELECT prev, w, COUNT(*) AS c_pair FROM b GROUP BY 1, 2), cf AS (SELECT prev, CAST(SUM(c_pair) AS BIGINT) AS c_first FROM cp GROUP BY 1), t AS (SELECT doc_id, CAST(round(ln(CAST(c_first AS DOUBLE) / CAST(c_pair AS DOUBLE)), 9) AS DECIMAL(28,9)) AS nll FROM b JOIN cp USING (prev, w) JOIN cf USING (prev)) SELECT doc_id, COUNT(*) AS n_trans, round(CAST(SUM(nll) AS DOUBLE) / COUNT(*), 6) AS avg_nll FROM t GROUP BY doc_id ORDER BY doc_id""",
-    // q193's hex-space framing + exact integer byte-sum energies; the
-    // island numbering replays as the same gaps-and-islands window
-    "q229_energy_segments" ->
-      """WITH p AS (SELECT doc_id, hex(encode(text)) AS hx FROM documents), f AS (SELECT doc_id, unnest(range(0, greatest(length(hx) // 2, 1), 256)) AS off, hx FROM p WHERE length(hx) > 0), fr AS (SELECT doc_id, CAST(off // 256 AS BIGINT) AS frame_idx, substring(hx, CAST(off * 2 + 1 AS BIGINT), 512) AS h FROM f), en AS (SELECT doc_id, frame_idx, CAST(length(h) // 2 AS BIGINT) AS flen, CAST(list_reduce(list_prepend(0, list_transform(range(0, length(h) // 2), i6 -> CAST(concat('0x', substring(h, CAST(i6 * 2 + 1 AS INTEGER), 2)) AS BIGINT))), (a6, b6) -> a6 + b6) AS BIGINT) AS energy FROM fr), act AS (SELECT doc_id, frame_idx, energy FROM en WHERE energy > 96 * flen), sg AS (SELECT doc_id, frame_idx, energy, CASE WHEN lag(frame_idx) OVER (PARTITION BY doc_id ORDER BY frame_idx) = frame_idx - 1 THEN 0 ELSE 1 END AS is_new FROM act), gi AS (SELECT doc_id, frame_idx, energy, CAST(SUM(is_new) OVER (PARTITION BY doc_id ORDER BY frame_idx ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS seg_idx FROM sg) SELECT doc_id, seg_idx, MIN(frame_idx) AS start_frame, MAX(frame_idx) AS end_frame, COUNT(*) AS n_frames, CAST(SUM(energy) AS BIGINT) AS seg_energy FROM gi GROUP BY 1, 2 ORDER BY doc_id, seg_idx""",
-    // the maintained k-per-group state equals the one-shot ranking:
-    // top-k merging is associative under (value DESC, event_id)
-    "q228_stream_topk" ->
-      """SELECT event_type, rnk, event_id, value FROM (SELECT event_type, event_id, value, ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY value DESC, event_id) AS rnk FROM events) WHERE rnk <= 5 ORDER BY event_type, rnk""",
-    // the serialized race reduces to: delete, content-preserving
-    // compaction, append — whatever the physical interleaving was
-    "q227_occ_race" ->
-      """SELECT o_orderstatus, COUNT(*) AS n, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total FROM (SELECT o_orderstatus, o_totalprice FROM orders WHERE o_totalprice <= 250000.0 UNION ALL SELECT 'X' AS o_orderstatus, o_totalprice FROM orders WHERE o_orderkey % 97 = 0) GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-    // the md5-rank keep set replays exactly; blocked sources never rank
-    "q226_source_cap" ->
-      """WITH r AS (SELECT doc_id, source, lang, ROW_NUMBER() OVER (PARTITION BY source ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS cap_rank FROM documents WHERE source NOT IN ('src7', 'src13')) SELECT doc_id, source, lang, CAST(cap_rank AS BIGINT) AS cap_rank FROM r WHERE cap_rank <= 20 ORDER BY doc_id""",
-    // q84's replayed MinHash machinery + q59's reachability closure; the
-    // canonical pick is the longest doc (n_chars), ties to the smallest id
-    "q155_canonical_dedup" -> canonicalOracleSql,
-    // incremental canonical maintenance must equal the one-shot
-    // cluster-and-pick — q155's oracle, shared verbatim
-    "q221_canonical_maintenance" -> canonicalOracleSql,
-    // same normalized word split as q85; ties broken lexicographically;
-    // coverage = exact integer cumulative over exact integer total
-    "q156_vocab_build" ->
-      """WITH w AS (SELECT doc_id, unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w FROM documents), c AS (SELECT w, COUNT(*) AS cnt, COUNT(DISTINCT doc_id) AS df FROM w GROUP BY 1), t AS (SELECT CAST(SUM(cnt) AS DOUBLE) AS total FROM c), r AS (SELECT w, cnt, df, ROW_NUMBER() OVER (ORDER BY cnt DESC, w) AS rn FROM c) SELECT CAST(rn - 1 AS BIGINT) AS token_id, w, cnt, df, round(CAST(SUM(cnt) OVER (ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) / (SELECT total FROM t), 9) AS coverage FROM r WHERE rn <= 1000 ORDER BY token_id""",
-    // char-based substr agrees across engines (incl. multibyte); weights
-    // are exact integer word counts
-    "q157_bpe_pairs" ->
-      """WITH w AS (SELECT unnest(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS w FROM documents), c AS (SELECT w, COUNT(*) AS cnt FROM w GROUP BY 1), pr AS (SELECT substr(w, CAST(i + 1 AS INTEGER), 2) AS pair, w, cnt FROM (SELECT w, cnt, unnest(range(length(w) - 1)) AS i FROM c WHERE length(w) >= 2)), a AS (SELECT pair, CAST(SUM(cnt) AS BIGINT) AS total, COUNT(DISTINCT w) AS n_words FROM pr GROUP BY 1), r AS (SELECT pair, total, n_words, ROW_NUMBER() OVER (ORDER BY total DESC, pair) AS rk0 FROM a) SELECT CAST(rk0 AS BIGINT) AS rk, pair, total, n_words FROM r WHERE rk0 <= 100 ORDER BY rk""",
-    // same synthesis, same lookaround-free normalization chain; every
-    // DuckDB replace carries the g flag to match Java's replace-all
-    "q158_url_normalize" ->
-      """WITH s AS (SELECT doc_id, lang, source || '.example.com' AS host, doc_id % 4 AS v FROM documents), raw AS (SELECT doc_id, CASE v WHEN 0 THEN 'HTTPS://WWW.' || upper(host) || ':443/docs/' || CAST(doc_id AS VARCHAR) || '?utm_source=x&ref=' || lang || '#top' WHEN 1 THEN 'http://' || host || '/docs/' || CAST(doc_id AS VARCHAR) || '/' WHEN 2 THEN 'https://' || host || ':8080/docs/' || CAST(doc_id AS VARCHAR) || '?utm_medium=y' ELSE 'https://m.' || host || '/docs/' || CAST(doc_id AS VARCHAR) END AS u FROM s), n1 AS (SELECT doc_id, lower(regexp_extract(u, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*')) || substr(u, length(regexp_extract(u, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]*')) + 1) AS u FROM raw), n2 AS (SELECT doc_id, regexp_replace(u, '#.*$', '', 'g') AS u FROM n1), n3 AS (SELECT doc_id, regexp_replace(u, '[?&]utm_[A-Za-z_]+=[^&#]*', '', 'g') AS u FROM n2), n4 AS (SELECT doc_id, regexp_replace(regexp_replace(u, '^([^?&]*)&', '\1?', 'g'), '\?$', '', 'g') AS u FROM n3), n5 AS (SELECT doc_id, regexp_replace(regexp_replace(u, '^(https://[^/:?#]+):443([/?#].*)?$', '\1\2', 'g'), '^(http://[^/:?#]+):80([/?#].*)?$', '\1\2', 'g') AS u FROM n4), n6 AS (SELECT doc_id, regexp_replace(u, '^(https?://)(www\.|m\.)', '\1', 'g') AS u FROM n5), n7 AS (SELECT doc_id, regexp_replace(u, '/$', '', 'g') AS url FROM n6) SELECT doc_id, url, regexp_extract(url, '^[a-z]+://([^/:?#]+)', 1) AS host FROM n7 ORDER BY doc_id""",
-    // √count quantized to DECIMAL(28,12) BEFORE the cross-stratum sum on
-    // both sides (order-independent total); same md5 rank recipe as q47/q48
-    "q159_temperature_sample" ->
-      """WITH c AS (SELECT lang, COUNT(*) AS cnt FROM documents GROUP BY 1), w AS (SELECT lang, CAST(sqrt(CAST(cnt AS DOUBLE)) AS DECIMAL(28,12)) AS wq FROM c), t AS (SELECT CAST(SUM(wq) AS DOUBLE) AS tw FROM w), q AS (SELECT lang, CAST(floor(200.0 * CAST(wq AS DOUBLE) / (SELECT tw FROM t)) AS BIGINT) AS quota FROM w), r AS (SELECT doc_id, lang, CAST(ROW_NUMBER() OVER (PARTITION BY lang ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) AS rk FROM documents) SELECT r.doc_id, r.lang, r.rk, q.quota FROM r JOIN q USING (lang) WHERE r.rk <= q.quota ORDER BY lang, rk""",
-    // q64's island replay + per-(user, valid_from) max-version collapse,
-    // then the latest version at or before each purchase second — the
-    // as-of inclusive-<= convention both engines pin identically
-    "q160_pit_join" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), c AS (SELECT user_id, event_id, event_type, sec, CASE WHEN lag(event_type) OVER w IS NULL OR lag(event_type) OVER w <> event_type THEN 1 ELSE 0 END AS chg FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)), g AS (SELECT user_id, event_type, sec, CAST(SUM(chg) OVER (PARTITION BY user_id ORDER BY sec, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS version FROM c), i AS (SELECT user_id, version, MIN(event_type) AS state_type, MIN(sec) AS valid_from FROM g GROUP BY 1, 2), d AS (SELECT user_id, version, state_type, valid_from FROM (SELECT i.*, ROW_NUMBER() OVER (PARTITION BY user_id, valid_from ORDER BY version DESC) AS rn FROM i) WHERE rn = 1), p AS (SELECT user_id, event_id AS p_id, sec FROM e WHERE event_type = 'purchase'), j AS (SELECT p.p_id, p.user_id, p.sec, d.version, d.state_type, ROW_NUMBER() OVER (PARTITION BY p.p_id ORDER BY d.valid_from DESC) AS rn FROM p JOIN d ON p.user_id = d.user_id AND d.valid_from <= p.sec) SELECT p_id, user_id, sec, version, state_type FROM j WHERE rn = 1 ORDER BY p_id""",
-    // both snapshots replay as plain SQL over events: v1 = pre-max-date
-    // days, latest = everything minus the erased error rows; the
-    // checkpoint must be invisible to the data
-    "q163_log_checkpoint" ->
-      s"""WITH daily AS (SELECT strftime(ts, '%Y-%m-%d') AS date_id, event_type, COUNT(*) AS n_events, $SUMV AS total_value FROM events GROUP BY 1, 2), mx AS (SELECT MAX(date_id) AS d FROM daily) SELECT * FROM (SELECT 'v1' AS snap, date_id, event_type, n_events, total_value FROM daily, mx WHERE date_id < mx.d UNION ALL SELECT 'latest', date_id, event_type, n_events, total_value FROM daily WHERE event_type <> 'error') ORDER BY snap, date_id, event_type""",
-    // exact discrete-rank boundaries at eighths (all exactly binary
-    // fractions, so ceil(cnt*p) replays bit-for-bit), then the CASE-chain
-    // bucket assignment — identical to the writer's
-    "q164_range_layout" ->
-      """WITH r AS (SELECT o_totalprice, ROW_NUMBER() OVER (ORDER BY o_totalprice, o_orderkey) AS rn, COUNT(*) OVER () AS cnt FROM orders), b AS (SELECT MAX(CASE WHEN rn = CAST(ceil(cnt * 0.125) AS BIGINT) THEN o_totalprice END) AS b1, MAX(CASE WHEN rn = CAST(ceil(cnt * 0.25) AS BIGINT) THEN o_totalprice END) AS b2, MAX(CASE WHEN rn = CAST(ceil(cnt * 0.375) AS BIGINT) THEN o_totalprice END) AS b3, MAX(CASE WHEN rn = CAST(ceil(cnt * 0.5) AS BIGINT) THEN o_totalprice END) AS b4, MAX(CASE WHEN rn = CAST(ceil(cnt * 0.625) AS BIGINT) THEN o_totalprice END) AS b5, MAX(CASE WHEN rn = CAST(ceil(cnt * 0.75) AS BIGINT) THEN o_totalprice END) AS b6, MAX(CASE WHEN rn = CAST(ceil(cnt * 0.875) AS BIGINT) THEN o_totalprice END) AS b7 FROM r), d AS (SELECT o_totalprice, CASE WHEN o_totalprice <= b1 THEN 1 WHEN o_totalprice <= b2 THEN 2 WHEN o_totalprice <= b3 THEN 3 WHEN o_totalprice <= b4 THEN 4 WHEN o_totalprice <= b5 THEN 5 WHEN o_totalprice <= b6 THEN 6 WHEN o_totalprice <= b7 THEN 7 ELSE 8 END AS bucket FROM orders, b) SELECT CAST(bucket AS BIGINT) AS bucket, COUNT(*) AS n, MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi FROM d GROUP BY 1 ORDER BY bucket""",
-    // flagged keys and salt factors replay as a HAVING aggregate
-    "q166_skew_report" ->
-      """SELECT event_type, COUNT(*) AS n, CAST(ceil(CAST(COUNT(*) AS DOUBLE) / 500.0) AS BIGINT) AS salt_factor FROM events GROUP BY 1 HAVING COUNT(*) >= 100 ORDER BY event_type""",
-    // the constrained table is just the valid load (the violating commit
-    // must be invisible), so the aggregate replays plainly
-    "q168_checked_commit" ->
-      """SELECT o_orderstatus, COUNT(*) AS n, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total FROM orders GROUP BY 1 ORDER BY o_orderstatus""",
-    // the converged CDC table is the global latest event per user by
-    // (sec, event_id) — batch-split must be invisible
-    "q165_stream_cdc_apply" ->
-      """SELECT user_id, event_id, event_type, value, sec FROM (SELECT user_id, event_id, event_type, value, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec, ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY CAST(epoch_ns(ts) // 1000000000 AS BIGINT) DESC, event_id DESC) AS rn FROM events) WHERE rn = 1 ORDER BY user_id""",
-    // the layout-aware union must equal the plain filtered aggregate —
-    // rows duplicated or lost across generations break count and sum
-    "q161_partition_evolution" ->
-      s"""SELECT strftime(ts, '%Y-%m-%d') AS date_id, COUNT(*) AS n, $SUMV AS total_value FROM events WHERE event_type = 'purchase' GROUP BY 1 ORDER BY date_id""",
-    // same degree-ordered orientation both sides: tuple-wise (deg, id)
-    // comparisons, wedge at the lowest-ordered vertex, one closing probe
-    "q162_triangles" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem), e0 AS (SELECT a.pk AS a, b.pk AS b FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk GROUP BY 1, 2 HAVING COUNT(*) >= 2), deg AS (SELECT node, COUNT(*) AS deg FROM (SELECT a AS node FROM e0 UNION ALL SELECT b FROM e0) GROUP BY 1), o AS (SELECT CASE WHEN (da.deg, e0.a) < (db.deg, e0.b) THEN e0.a ELSE e0.b END AS src, CASE WHEN (da.deg, e0.a) < (db.deg, e0.b) THEN e0.b ELSE e0.a END AS dst, CASE WHEN (da.deg, e0.a) < (db.deg, e0.b) THEN db.deg ELSE da.deg END AS ddeg FROM e0 JOIN deg da ON da.node = e0.a JOIN deg db ON db.node = e0.b), w AS (SELECT e1.src, e1.dst AS u, e2.dst AS v FROM o e1 JOIN o e2 ON e1.src = e2.src AND (e1.ddeg, e1.dst) < (e2.ddeg, e2.dst)), t AS (SELECT w.src, w.u, w.v FROM w JOIN o ON o.src = w.u AND o.dst = w.v), pn AS (SELECT node, COUNT(*) AS n_triangles FROM (SELECT src AS node FROM t UNION ALL SELECT u FROM t UNION ALL SELECT v FROM t) GROUP BY 1) SELECT node, n_triangles FROM pn ORDER BY n_triangles DESC, node LIMIT 50""",
-    // footer-derived stats must equal the plain aggregates
-    "q151_footer_stats" ->
-      """SELECT COUNT(*) AS n_rows, MIN(o_orderkey) AS min_o_orderkey, MAX(o_orderkey) AS max_o_orderkey, MIN(o_totalprice) AS min_o_totalprice, MAX(o_totalprice) AS max_o_totalprice FROM orders""",
-    // closed-form OLS over exact integer sums; identical double op order
-    "q147_trend_ols" ->
-      """WITH h AS (SELECT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id, COUNT(*) AS n FROM events GROUP BY 1, 2), b AS (SELECT event_type, hour_id - MIN(hour_id) OVER (PARTITION BY event_type) AS x, n AS y FROM h), a AS (SELECT event_type, COUNT(*) AS n, CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy, CAST(SUM(x * x) AS BIGINT) AS sxx, CAST(SUM(x * y) AS BIGINT) AS sxy, COUNT(DISTINCT x) AS nx FROM b GROUP BY 1) SELECT event_type, n, round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)), 6) AS slope FROM a WHERE nx >= 2 ORDER BY event_type""",
-    // residual squares quantized to DECIMAL(28,12) before the sum on both
-    // sides (order-independent), sqrt/divisions correctly rounded
-    "q148_seasonal_anomaly" ->
-      """WITH h AS (SELECT event_type, CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_id, COUNT(*) AS n FROM events GROUP BY 1, 2), p AS (SELECT event_type, hour_id, hour_id % 24 AS season_pos, CAST(n AS DOUBLE) AS n FROM h), w AS (SELECT event_type, hour_id, n, AVG(n) OVER (PARTITION BY event_type, season_pos) AS seasonal FROM p), r AS (SELECT event_type, hour_id, n, seasonal, n - seasonal AS resid FROM w), t AS (SELECT event_type, hour_id, n, seasonal, resid, sqrt(CAST(SUM(CAST(resid * resid AS DECIMAL(28,12))) OVER (PARTITION BY event_type) AS DOUBLE) / CAST(COUNT(*) OVER (PARTITION BY event_type) AS DOUBLE)) AS sd FROM r) SELECT event_type, hour_id, CAST(n AS BIGINT) AS n, round(seasonal, 6) AS seasonal, CAST(CASE WHEN abs(resid) > 2.0 * sd THEN 1 ELSE 0 END AS INT) AS anomaly FROM t ORDER BY event_type, hour_id""",
-    // the affected-file UPDATE must be row-equivalent to the plain CASE
-    "q145_txlake_update" ->
-      """SELECT event_type, COUNT(*) AS n, CAST(SUM(CASE WHEN event_type = 'purchase' THEN CAST(value AS DECIMAL(18,2)) + 100 ELSE CAST(value AS DECIMAL(18,2)) END) AS DOUBLE) AS total_value FROM events GROUP BY event_type ORDER BY event_type""",
-    // MERGE = replace matched keys, insert unmatched ones
-    "q146_txlake_merge" ->
-      """SELECT c_custkey, CAST(CASE WHEN c_custkey <= 100 THEN 0.00 ELSE CAST(c_acctbal AS DECIMAL(12,2)) END AS DOUBLE) AS bal FROM customer WHERE c_custkey <= 500 UNION ALL SELECT k, 1.0 FROM range(10001, 10006) t(k) ORDER BY c_custkey""",
-    // the maintained view's aggregate must equal the plain full join
-    "q144_incremental_join" ->
-      """SELECT strftime(o_orderdate, '%Y-%m') AS month, c_mktsegment AS segment, COUNT(*) AS n, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1, 2 ORDER BY month, segment""",
-    // identical blocking and dirty-name synthesis; DuckDB's
-    // jaro_winkler_similarity is bit-identical to the codegen expression
-    // (verified over all 150k blocked pairs), so the raw-double threshold
-    // replays exactly
-    "q143_fuzzy_linkage" ->
-      """WITH a AS (SELECT c_custkey AS a_key, c_name AS a_name, substring(c_name, 10, 7) AS blk FROM customer), b AS (SELECT c_custkey AS b_key, concat(substring(c_name, 1, length(c_name) - 2), substring(c_name, length(c_name), 1), substring(c_name, length(c_name) - 1, 1)) AS b_name, substring(c_name, 10, 7) AS blk FROM customer) SELECT a_key, b_key, round(jaro_winkler_similarity(a_name, b_name), 6) AS sim FROM a JOIN b USING (blk) WHERE jaro_winkler_similarity(a_name, b_name) >= 0.98 ORDER BY a_key, b_key""",
-    // append emission at watermark passage must equal batch
-    // sessionization — same gap-split replay as q54
-    "q142_stream_append_sessions" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), s AS (SELECT user_id, event_id, sec, CASE WHEN lag(sec) OVER w IS NULL OR sec - lag(sec) OVER w > 1800 THEN 1 ELSE 0 END AS new_s FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)), t AS (SELECT user_id, sec, CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY sec, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id FROM s) SELECT user_id, MIN(sec) AS start_sec, MAX(sec) AS end_sec, COUNT(*) AS n_events FROM t GROUP BY user_id, session_id ORDER BY user_id, start_sec""",
-    // the pruned update-mode emissions must equal batch sessionization —
-    // same gap-split replay as q54
-    "q135_stream_update_sessions" ->
-      """WITH e AS (SELECT user_id, event_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS sec FROM events), s AS (SELECT user_id, event_id, sec, CASE WHEN lag(sec) OVER w IS NULL OR sec - lag(sec) OVER w > 1800 THEN 1 ELSE 0 END AS new_s FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id)), t AS (SELECT user_id, sec, CAST(SUM(new_s) OVER (PARTITION BY user_id ORDER BY sec, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id FROM s) SELECT user_id, MIN(sec) AS start_sec, MAX(sec) AS end_sec, COUNT(*) AS n_events FROM t GROUP BY user_id, session_id ORDER BY user_id, start_sec""",
-    // the append-mode drain must emit every CLOSED hourly window exactly
-    // once, so the stream result replays as the plain batch hourly counts
-    // plus a per-key trailing-24-row window; sums of small ints are exact
-    // in double, so avg and the 2x comparison are deterministic both sides
-    "q136_stream_alerts" ->
-      """WITH hourly AS (SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour, event_type, COUNT(*) AS n FROM events GROUP BY 1, 2), b AS (SELECT hour, event_type, n, CAST(COUNT(n) OVER w AS BIGINT) AS n_prior, AVG(n) OVER w AS baseline FROM hourly WINDOW w AS (PARTITION BY event_type ORDER BY hour ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING)) SELECT hour, event_type, n, n_prior, round(baseline, 6) AS baseline, CAST(CASE WHEN n_prior >= 3 AND CAST(n AS DOUBLE) > 2.0 * baseline THEN 1 ELSE 0 END AS INT) AS alert FROM b ORDER BY event_type, hour""",
-    // the lake read-back after the double run must equal the plain
-    // one-day aggregates — duplicates or partition drift break the hash
-    "q137_job_runner" ->
-      """WITH mx AS (SELECT MAX(strftime(ts, '%Y-%m-%d')) AS d FROM events), ev AS (SELECT event_type, user_id, value FROM events, mx WHERE strftime(ts, '%Y-%m-%d') = mx.d) SELECT * FROM (SELECT 'daily_type_stats' AS job, event_type AS key, COUNT(*) AS n, CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value FROM ev GROUP BY 2 UNION ALL SELECT 'daily_users', 'ALL', COUNT(DISTINCT user_id), CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) FROM ev) ORDER BY job, key""",
-    // every gathered byte slice replayed in HEX space (same trick as
-    // q129): a byte-aligned slice of hex(payload) IS the hex of the byte
-    // slice, and string_agg over the spanned raster rows in y-order equals
-    // the Spark-side binary fold; both engines' hex and md5 agree
-    "q134_image_tiles" ->
-      """WITH p AS (SELECT doc_id, hex(encode(text)) AS hx FROM documents WHERE doc_id <= 200), d AS (SELECT doc_id, hx, length(hx) // 2 AS len, (length(hx) // 2 + 63) // 64 AS n_rows FROM p WHERE length(hx) > 0), tr AS (SELECT doc_id, hx, len, n_rows, unnest(range(0, (n_rows + 15) // 16)) AS tile_r FROM d), tc AS (SELECT doc_id, hx, len, n_rows, tile_r, unnest(range(0, (least(len, 64) + 15) // 16)) AS tile_c FROM tr), y AS (SELECT doc_id, tile_r, tile_c, hx, unnest(range(tile_r * 16, least((tile_r + 1) * 16, n_rows))) AS yy FROM tc), sl AS (SELECT doc_id, tile_r, tile_c, yy, substring(hx, CAST((yy * 64 + tile_c * 16) * 2 + 1 AS BIGINT), 32) AS s FROM y), t AS (SELECT doc_id, CAST(tile_r AS BIGINT) AS tile_r, CAST(tile_c AS BIGINT) AS tile_c, string_agg(s, '' ORDER BY yy) AS thx FROM sl GROUP BY 1, 2, 3) SELECT doc_id, tile_r, tile_c, CAST(length(thx) // 2 AS BIGINT) AS tile_len, md5(thx) AS tile_md5 FROM t WHERE length(thx) > 0 ORDER BY doc_id, tile_r, tile_c""",
-    "q132_conversion_window" ->
-      """WITH fv AS (SELECT user_id, MIN(CAST(epoch_ns(ts) // 1000000000 AS BIGINT)) AS v_sec FROM events WHERE event_type = 'view' GROUP BY user_id), p AS (SELECT user_id AS p_user, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS p_sec FROM events WHERE event_type = 'purchase'), conv AS (SELECT DISTINCT fv.user_id FROM fv JOIN p ON fv.user_id = p.p_user AND p.p_sec > fv.v_sec AND p.p_sec <= fv.v_sec + 86400) SELECT strftime(to_timestamp(v_sec), '%Y-%m-%d') AS view_day, COUNT(*) AS n_first_views, CAST(SUM(CASE WHEN conv.user_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_converted_24h, round(CAST(SUM(CASE WHEN conv.user_id IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6) AS conversion_rate FROM fv LEFT JOIN conv ON fv.user_id = conv.user_id GROUP BY 1 ORDER BY view_day""",
-    // same classification windows; churn lands the day AFTER a gap opens,
-    // bounded by the max active day
-    "q131_growth_accounting" ->
-      """WITH days AS (SELECT DISTINCT user_id, CAST(strftime(ts, '%Y-%m-%d') AS DATE) AS day FROM events), mx AS (SELECT MAX(day) AS m FROM days), marked AS (SELECT user_id, day, lag(day) OVER w AS prev, lead(day) OVER w AS next FROM days WINDOW w AS (PARTITION BY user_id ORDER BY day)), activity AS (SELECT day, CASE WHEN prev IS NULL THEN 'new' WHEN day - prev = 1 THEN 'retained' ELSE 'resurrected' END AS kind FROM marked), churn AS (SELECT day + 1 AS day, 'churned' AS kind FROM marked WHERE (next IS NULL OR next - day > 1) AND day + 1 <= (SELECT m FROM mx)), u AS (SELECT * FROM activity UNION ALL SELECT * FROM churn) SELECT CAST(day AS VARCHAR) AS day, CAST(SUM(CASE WHEN kind = 'new' THEN 1 ELSE 0 END) AS BIGINT) AS n_new, CAST(SUM(CASE WHEN kind = 'retained' THEN 1 ELSE 0 END) AS BIGINT) AS n_retained, CAST(SUM(CASE WHEN kind = 'resurrected' THEN 1 ELSE 0 END) AS BIGINT) AS n_resurrected, CAST(SUM(CASE WHEN kind = 'churned' THEN 1 ELSE 0 END) AS BIGINT) AS n_churned FROM u GROUP BY day ORDER BY day""",
-    // the two-phase checksum drill-down must surface exactly the keys the
-    // drift injection touched — replayed as direct CASE logic
-    "q130_reconcile" ->
-      """SELECT c_custkey, status FROM (SELECT c_custkey, CASE WHEN c_custkey % 89 = 0 THEN 'A_only' WHEN c_custkey % 97 = 0 THEN 'differs' END AS status FROM customer UNION ALL SELECT 10000000, 'B_only') WHERE status IS NOT NULL ORDER BY c_custkey""",
-    // identical fixed-order marginal/expected arithmetic; DuckDB weekday
-    // is 0-based (Spark's is 1-based) hence the +1
-    "q128_chi_square" ->
-      """WITH ev AS (SELECT event_type AS t, dayofweek(ts) + 1 AS d FROM events), cells AS (SELECT t, d, COUNT(*) AS o FROM ev GROUP BY 1, 2), tot AS (SELECT t, d, o, CAST(SUM(o) OVER (PARTITION BY t) AS BIGINT) AS rt, CAST(SUM(o) OVER (PARTITION BY d) AS BIGINT) AS ct, CAST(SUM(o) OVER () AS BIGINT) AS n FROM cells), term AS (SELECT t, d, CAST((CAST(o AS DOUBLE) - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE)) * (CAST(o AS DOUBLE) - CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE)) / (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE) / CAST(n AS DOUBLE)) AS DECIMAL(28,9)) AS tm FROM tot) SELECT round(CAST(SUM(tm) AS DOUBLE), 6) AS chi2, CAST((COUNT(DISTINCT t) - 1) * (COUNT(DISTINCT d) - 1) AS BIGINT) AS dof FROM term""",
-    // every byte slice replayed in HEX space (DuckDB 1.0 has no blob
-    // substring/md5): a byte-aligned slice of hex(payload) IS the hex of
-    // the byte slice, and both engines' hex is uppercase
-    "q129_frame_windows" ->
-      """WITH p AS (SELECT doc_id, hex(encode(text)) AS hx FROM documents WHERE doc_id <= 200), f AS (SELECT doc_id, unnest(range(0, greatest(length(hx) // 2, 1), 128)) AS off, hx FROM p WHERE length(hx) > 0) SELECT doc_id, CAST(off // 128 AS BIGINT) AS frame_idx, CAST(length(substring(hx, CAST(off * 2 + 1 AS BIGINT), 512)) // 2 AS BIGINT) AS frame_len, md5(substring(hx, CAST(off * 2 + 1 AS BIGINT), 512)) AS frame_md5 FROM f ORDER BY doc_id, frame_idx""",
-    // optimize + vacuum must be row-invisible: the read-back equals the
-    // plain aggregate however the files were compacted or reclaimed
-    "q127_optimize_vacuum" ->
-      s"""SELECT event_type, COUNT(*) AS n, $SUMV AS total_value FROM events GROUP BY event_type ORDER BY event_type""",
-    // the pruned read + exact filter must equal the plain filtered
-    // aggregate; the boundary replays as integer division of the max
-    "q125_data_skipping" ->
-      s"""WITH t AS (SELECT MAX(user_id) // 3 AS t FROM events) SELECT event_type, COUNT(*) AS n, $SUMV AS total_value FROM events, t WHERE user_id BETWEEN 1 AND t.t GROUP BY event_type ORDER BY event_type""",
-    "q126_scd2_apply" ->
-      """SELECT * FROM (SELECT c_custkey, c_mktsegment AS segment, '2020-01-01' AS eff_from, CASE WHEN c_custkey % 4 = 0 THEN '2024-06-01' END AS eff_to FROM customer WHERE c_custkey <= 200 UNION ALL SELECT c_custkey, 'MOVED', '2024-06-01', NULL FROM customer WHERE c_custkey <= 200 AND c_custkey % 4 = 0) ORDER BY c_custkey, eff_from""",
-    // per-touch shares land on the 1e-9 decimal grid before the per-user
-    // sum; value/n is the same fixed-order double division both sides
-    "q122_attribution" ->
-      """WITH p AS (SELECT event_id AS pid, user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS p_sec, value FROM events WHERE event_type = 'purchase'), c AS (SELECT event_id AS cid, user_id, CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS c_sec FROM events WHERE event_type = 'click'), t AS (SELECT p.pid, p.user_id, p.value, c.cid FROM p JOIN c ON p.user_id = c.user_id AND c.c_sec >= p.p_sec - 3600 AND c.c_sec < p.p_sec), n AS (SELECT pid, COUNT(*) AS n_t FROM t GROUP BY pid) SELECT t.user_id, COUNT(*) AS n_touches, round(CAST(SUM(CAST(t.value / n.n_t AS DECIMAL(18,9))) AS DOUBLE), 6) AS attributed_value FROM t JOIN n USING (pid) GROUP BY t.user_id ORDER BY t.user_id""",
-    "q123_cooccurrence" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem) SELECT a.pk AS p1, b.pk AS p2, COUNT(*) AS n_orders FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk GROUP BY 1, 2 ORDER BY n_orders DESC, p1, p2 LIMIT 50""",
-    // med and MAD replayed with the same ceil(n*0.5) discrete-rank rule;
-    // the 3*mad fence is the same fixed-order double compare
-    "q124_robust_outliers" ->
-      """WITH r AS (SELECT o_orderpriority, o_orderkey, o_totalprice, ROW_NUMBER() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey) AS rn, COUNT(*) OVER (PARTITION BY o_orderpriority) AS cnt FROM orders), m AS (SELECT o_orderpriority, MAX(CASE WHEN rn = CAST(ceil(cnt * 0.5) AS BIGINT) THEN o_totalprice END) AS med FROM r GROUP BY 1), d AS (SELECT o.o_orderpriority, o.o_orderkey, abs(o.o_totalprice - m.med) AS dev, m.med FROM orders o JOIN m ON o.o_orderpriority = m.o_orderpriority), r2 AS (SELECT o_orderpriority, dev, med, ROW_NUMBER() OVER (PARTITION BY o_orderpriority ORDER BY dev, o_orderkey) AS rn, COUNT(*) OVER (PARTITION BY o_orderpriority) AS cnt FROM d), m2 AS (SELECT o_orderpriority, MAX(CASE WHEN rn = CAST(ceil(cnt * 0.5) AS BIGINT) THEN dev END) AS mad FROM r2 GROUP BY 1) SELECT d.o_orderpriority, MAX(d.med) AS med, MAX(m2.mad) AS mad, CAST(SUM(CASE WHEN d.dev > m2.mad * 3.0 THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers, COUNT(*) AS n FROM d JOIN m2 ON d.o_orderpriority = m2.o_orderpriority GROUP BY d.o_orderpriority ORDER BY d.o_orderpriority""",
-    // boundaries replayed with the same ceil(n*p) discrete-rank rule as
-    // Relational.discretePercentiles, then the same <=-boundary buckets
-    "q116_discretize" ->
-      """WITH r AS (SELECT o_orderpriority, o_totalprice, o_orderkey, ROW_NUMBER() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice, o_orderkey) AS rn, COUNT(*) OVER (PARTITION BY o_orderpriority) AS cnt FROM orders), b AS (SELECT o_orderpriority, MAX(CASE WHEN rn = CAST(ceil(cnt * 0.25) AS BIGINT) THEN o_totalprice END) AS p25, MAX(CASE WHEN rn = CAST(ceil(cnt * 0.5) AS BIGINT) THEN o_totalprice END) AS p50, MAX(CASE WHEN rn = CAST(ceil(cnt * 0.75) AS BIGINT) THEN o_totalprice END) AS p75 FROM r GROUP BY o_orderpriority) SELECT o.o_orderpriority, CAST(CASE WHEN o_totalprice <= p25 THEN 1 WHEN o_totalprice <= p50 THEN 2 WHEN o_totalprice <= p75 THEN 3 ELSE 4 END AS BIGINT) AS bucket, COUNT(*) AS n, MIN(o_totalprice) AS lo, MAX(o_totalprice) AS hi FROM orders o JOIN b ON o.o_orderpriority = b.o_orderpriority GROUP BY 1, 2 ORDER BY o.o_orderpriority, bucket""",
-    "q113_schema_evolution" ->
-      """SELECT c_custkey, c_name, CASE WHEN c_custkey % 5 = 0 THEN (CASE WHEN c_custkey % 3 = 0 THEN 'gold' WHEN c_custkey % 3 = 1 THEN 'silver' ELSE 'bronze' END) END AS c_tier, CAST(CASE WHEN c_custkey % 5 = 0 THEN 2 ELSE 1 END AS BIGINT) AS version FROM customer WHERE c_custkey <= 300 ORDER BY c_custkey""",
-    // replays the stub server's exact-in-double metric formulas directly
-    // over nation; keys ≡ 7 (mod 13) 404 in the stub and are quarantined
-    "q93_api_ingest" ->
-      """SELECT n_name AS city, n_name AS country, CAST(n_nationkey AS DOUBLE) * 1.5 - 10.0 AS temp, CAST((n_nationkey * 7) % 100 AS BIGINT) AS humidity, CAST(n_nationkey AS DOUBLE) * 0.25 AS wind_speed, '2024-01-15' AS date_id FROM nation WHERE n_nationkey % 13 <> 7 ORDER BY city""",
-    "q80_bloom_prefilter" ->
-      """SELECT c_mktsegment, COUNT(*) AS n_orders, CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total FROM orders JOIN customer ON o_custkey = c_custkey WHERE c_mktsegment = 'BUILDING' GROUP BY c_mktsegment ORDER BY c_mktsegment""",
-    "q78_merge_upsert" ->
-      s"""WITH daily AS (SELECT strftime(ts, '%Y-%m-%d') AS date_id, event_type, COUNT(*) AS n_events, $SUMV AS total_value FROM events GROUP BY 1, 2), mx AS (SELECT MAX(date_id) AS d FROM daily), upd AS (SELECT date_id, event_type, n_events + 1000 AS n_events, total_value FROM daily WHERE date_id = (SELECT d FROM mx) AND event_type IN ('click', 'view') UNION ALL SELECT (SELECT d FROM mx), 'synthetic', 1, 0.0) SELECT * FROM (SELECT date_id, event_type, n_events, total_value FROM daily WHERE NOT (date_id = (SELECT d FROM mx) AND event_type IN ('click', 'view')) UNION ALL SELECT date_id, event_type, n_events, total_value FROM upd) ORDER BY date_id, event_type""",
-    "q39_clean_corpus" ->
-      """WITH s AS (SELECT doc_id, ' ' || lower(text) || ' ' AS p, CAST(array_length(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS BIGINT) AS n_words, CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) AS DOUBLE) / CAST(length(text) AS DOUBLE) AS alpha_ratio, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp FROM documents), sc AS (SELECT doc_id, n_words, alpha_ratio, fp, (length(p) - length(replace(p, ' the ', ' '))) / 4 + (length(p) - length(replace(p, ' a ', ' '))) / 2 AS s_en, (length(p) - length(replace(p, ' der ', ' '))) / 4 + (length(p) - length(replace(p, ' und ', ' '))) / 4 AS s_de, (length(p) - length(replace(p, ' el ', ' '))) / 3 + (length(p) - length(replace(p, ' los ', ' '))) / 4 AS s_es, (length(p) - length(replace(p, ' le ', ' '))) / 3 + (length(p) - length(replace(p, ' et ', ' '))) / 3 AS s_fr FROM s), l AS (SELECT doc_id, n_words, alpha_ratio, fp, CASE WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr AND s_en > 0 THEN 'en' WHEN s_de > s_en AND s_de >= s_es AND s_de >= s_fr AND s_de > 0 THEN 'de' WHEN s_es > s_en AND s_es > s_de AND s_es >= s_fr AND s_es > 0 THEN 'es' WHEN s_fr > s_en AND s_fr > s_de AND s_fr > s_es AND s_fr > 0 THEN 'fr' ELSE 'unknown' END AS lang_pred FROM sc), g AS (SELECT doc_id, n_words, alpha_ratio, lang_pred, ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id) AS rn FROM l WHERE n_words >= 10 AND alpha_ratio >= 0.5) SELECT doc_id, n_words, alpha_ratio, lang_pred FROM g WHERE rn = 1 ORDER BY doc_id""")
 }

@@ -30,9 +30,8 @@ object Verify {
           .setJobGroup(s"verify-$name", name, interruptOnCancel = true)
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        } finally spark.sparkContext.clearJobGroup()
+        catch { case e: Throwable => Failure.report("verify", name, e) }
+        finally spark.sparkContext.clearJobGroup()
       }, s"verify-$name")
       worker.setDaemon(true)
       worker.start()
