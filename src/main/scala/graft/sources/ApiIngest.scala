@@ -46,6 +46,12 @@ trait HttpFetcher extends Serializable {
   */
 object ApiIngest {
 
+  /** Statuses worth a retry: throttling, transient server errors, and the
+    * synthetic transport-error status. 4xx (other than 429) are
+    * deterministic rejections — retrying them only burns rate budget.
+    */
+  val RetryableStatuses: Set[Int] = Set(429, 500, 502, 503, 504, 599)
+
   /** Distributed, rate-limited fetch of every request.
     *
     * `maxPartitions` bounds concurrent clients (connections), and
@@ -53,12 +59,6 @@ object ApiIngest {
     * global rate is capped at `maxPartitions × perPartitionRequestsPerSec`
     * regardless of cluster size.
     */
-  /** Statuses worth a retry: throttling, transient server errors, and the
-    * synthetic transport-error status. 4xx (other than 429) are
-    * deterministic rejections — retrying them only burns rate budget.
-    */
-  val RetryableStatuses: Set[Int] = Set(429, 500, 502, 503, 504, 599)
-
   def fetchAll(
       requests: Dataset[FetchRequest],
       fetcher: HttpFetcher,

@@ -2,6 +2,8 @@ package graft.sources
 
 import java.util.Properties
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 
 /** Serving-layer JDBC sink with the reference's delete-by-key + append load.
@@ -65,7 +67,10 @@ object JdbcSink {
     *
     * The stage name carries a hash of the key value so concurrent refreshes
     * of DIFFERENT keys use disjoint stage tables, and the stage is dropped
-    * in a finally block (best-effort) so a failed refresh does not leak it.
+    * in a finally block (best-effort, a failed drop is printed to stderr)
+    * so a failed refresh does not leak it. A failed load rethrows its
+    * original error; a rollback that also fails is attached to it as a
+    * suppressed exception.
     */
   def load(
       df: DataFrame,
@@ -83,7 +88,9 @@ object JdbcSink {
     val cols = df.columns.map(c => s""""$c"""").mkString(", ")
     // best-effort drop on a FRESH short-lived connection: a connection
     // opened before the (possibly long) distributed staging write could be
-    // idle-timed-out by the server and fail the very cleanup it exists for
+    // idle-timed-out by the server and fail the very cleanup it exists for.
+    // A failed drop is reported, not thrown: it must not mask the load's
+    // own outcome.
     def dropStage(): Unit =
       try {
         val c = java.sql.DriverManager.getConnection(url, props)
@@ -92,7 +99,10 @@ object JdbcSink {
           try drop.executeUpdate(s"DROP TABLE $schema.$stage")
           finally drop.close()
         } finally c.close()
-      } catch { case _: Throwable => () }
+      } catch {
+        case NonFatal(e) =>
+          System.err.println(s"[jdbc] could not drop stage table $schema.$stage: $e")
+      }
     try {
       // distributed staging load first — no driver connection held open
       // underneath it
@@ -113,9 +123,10 @@ object JdbcSink {
           finally ins.close()
           conn.commit()
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
+            // keep the original failure; a failed rollback rides along on it
             try conn.rollback()
-            catch { case _: Throwable => () } // keep the original failure
+            catch { case NonFatal(r) => e.addSuppressed(r) }
             throw e
         }
       } finally conn.close()

@@ -41,12 +41,24 @@ object PartitionedLake {
       .partitionBy(partCols: _*)
       .parquet(path)
 
-  /** Partition-pruned read: filters on the partition column prune directories
-    * before any file IO (the reference achieves this by addressing a single
-    * `date_id=D/data.parquet` path).
+  /** Partition-pruned read: the relation `spark.read.parquet(path)` would
+    * give (same schema, inferred partition types, rows and files), whose
+    * file listing is pruned by the query's partition filters. The reference
+    * gets the same effect by addressing one `date_id=D/data.parquet` path.
+    *
+    * Listed eagerly, on the driver and with no Spark job: the `k=v`
+    * directory names (hidden `_`/`.` entries skipped) and the leaf
+    * directories up to the first one holding a data file; the smallest
+    * data file's footer gives the data schema. Listed lazily, when a query
+    * plans its scan: the files of just the partitions its partition filters
+    * keep. A scan with no partition filter, and anything that asks for the
+    * relation's size (join planning), lists the whole lake once, as
+    * `spark.read.parquet` does. A partition directory with no data file
+    * still counts toward partition-type inference, where Spark's listing
+    * would skip it.
     */
   def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    spark.baseRelationToDataFrame(LakeFileIndex.relation(spark, path))
 
   /** MERGE (upsert) emulation over the parquet lake: rows in `updates`
     * replace same-key rows, new keys append — the Iceberg/Delta `MERGE
@@ -102,7 +114,9 @@ object PartitionedLake {
       path: String,
       partCol: String,
       value: String): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/$partCol=$value")
+    // the writer escapes partition values (`a:b` is stored as `a%3Ab`)
+    val dir = new org.apache.hadoop.fs.Path(path,
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString(partCol, value))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(dir)) fs.delete(dir, true)
   }
@@ -237,7 +251,7 @@ object PartitionedLake {
           s"segment $d layout drift: manifest declares $declared, " +
             s"directories show ${seen.toSeq}")
       }
-      spark.read.parquet(d)
+      read(spark, d)
     }.reduce(_ unionByName _)
   }
 }

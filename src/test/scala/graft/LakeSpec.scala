@@ -1,13 +1,35 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame}
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelationWithTable}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{JdbcSink, PartitionedLake}
 
 class LakeSpec extends SparkSuite {
   import spark.implicits._
+
+  /** `PartitionedLake.read` must resolve what `spark.read.parquet` does:
+    * the same schema, and the same rows read from the same files, with no
+    * filter and under each of `filters`. */
+  private def assertReadParity(dir: String, filters: Column*): Unit = {
+    val ours = PartitionedLake.read(spark, dir)
+    val reference = spark.read.parquet(dir)
+    assert(ours.schema == reference.schema)
+    (lit(true) +: filters).foreach { f =>
+      def rows(df: DataFrame): Seq[String] =
+        df.filter(f).select(col("*"), col("_metadata.file_path").as("file_path"))
+          .collect().map(_.toString).toSeq.sorted
+      assert(rows(ours) == rows(reference), s"under $f")
+    }
+  }
 
   test("deleteInsert replaces only the partitions present in the refresh") {
     val dir = Files.createTempDirectory("graft_lake_spec").toString
@@ -187,5 +209,198 @@ class LakeSpec extends SparkSuite {
       .as[(String, String, Double)].collect().toSet
     assert(back == Set(
       ("2024-01-02", "keep", 3.0), ("2024-01-01", "new_a", 9.0)))
+  }
+
+  test("deletePartition removes a partition whose value the writer escaped") {
+    val dir = Files.createTempDirectory("graft_lake_escape").toString
+    val df = Seq(("2024-01-01 00:00:00", 1L), ("a:b c", 2L), ("plain", 3L)).toDF("p", "v")
+    PartitionedLake.writeAll(df, dir, Seq("p"))
+    PartitionedLake.deletePartition(spark, dir, "p", "2024-01-01 00:00:00")
+    PartitionedLake.deletePartition(spark, dir, "p", "a:b c")
+    val back = PartitionedLake.read(spark, dir).select("p", "v").as[(String, Long)].collect().toSet
+    assert(back == Set(("plain", 3L)))
+  }
+
+  test("read resolves the schema, rows and files spark.read.parquet does") {
+    def lake(name: String) = Files.createTempDirectory(s"graft_lake_parity_$name").toString
+    val days = Seq(("2024-01-01", 1, "apple", 1L), ("2024-01-02", 2, "banana", 2L),
+      ("2024-01-02", 3, "banana", 3L), ("2024-01-03", 4, "cherry", 4L))
+      .toDF("date_id", "n", "s", "v")
+
+    // date-like, integer and string partition values
+    Seq(("date_id", col("date_id") === "2024-01-02", col("date_id") >= "2024-01-02"),
+        ("n", col("n") === 2, col("n") > 2),
+        ("s", col("s") === "banana", col("s") > "b")).foreach { case (part, eq, range) =>
+      val dir = lake(part)
+      PartitionedLake.writeAll(days, dir, Seq(part))
+      assertReadParity(dir, eq, range)
+    }
+
+    // escaped values (`:` and a space), as strings and as timestamps
+    val escaped = lake("escaped")
+    PartitionedLake.writeAll(Seq(("a:b c", 1L), ("x y", 2L)).toDF("s", "v"), escaped, Seq("s"))
+    assertReadParity(escaped, col("s") === "a:b c", col("s") > "b")
+    val stamps = lake("stamps")
+    PartitionedLake.writeAll(Seq(("2024-01-01 00:00:00", 1L), ("2024-01-02 12:30:00", 2L))
+      .toDF("ts", "v"), stamps, Seq("ts"))
+    assertReadParity(stamps, col("ts") === "2024-01-01 00:00:00", col("ts") > "2024-01-01 12:00:00")
+
+    // two levels, as EventsStream.toLake writes them
+    val nested = lake("nested")
+    PartitionedLake.writeAll(days.withColumn("batch_id", col("n") % 2), nested, Seq("date_id", "batch_id"))
+    assertReadParity(nested, col("date_id") === "2024-01-02", col("batch_id") > 0)
+
+    // an empty partition directory and leftover writer directories
+    val debris = lake("debris")
+    PartitionedLake.writeAll(days, debris, Seq("date_id"))
+    Files.createDirectory(Paths.get(debris, "date_id=2024-01-09"))
+    val day1 = new java.io.File(s"$debris/date_id=2024-01-01").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head.toPath
+    Seq(".spark-staging-0/date_id=2024-01-05", "_temporary/0/date_id=2024-01-06").foreach { d =>
+      Files.createDirectories(Paths.get(debris, d))
+      Files.copy(day1, Paths.get(debris, d, "part-00000.parquet"))
+    }
+    assertReadParity(debris, col("date_id") === "2024-01-09", col("date_id") > "2024-01-02")
+
+    // the data schema comes from the smallest file path's footer, which is
+    // not in the smallest directory: `s=a-b/part…` sorts before `s=a/part…`
+    val drift = lake("drift")
+    PartitionedLake.writeAll(Seq(("a", 1L)).toDF("s", "v"), drift, Seq("s"))
+    PartitionedLake.deleteInsert(Seq(("a-b", 2L, 20L)).toDF("s", "v", "w"), drift, Seq("s"))
+    assert(PartitionedLake.read(spark, drift).columns.toSeq == Seq("v", "w", "s"))
+    assertReadParity(drift, col("s") === "a", col("s") > "a")
+
+    // a TIMESTAMP(NANOS) column, read as a long under nanosAsLong
+    val nanos = lake("nanos")
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 ts (TIMESTAMP(NANOS,false)); required int64 v; }")
+    Seq("2024-01-01" -> 1L, "2024-01-02" -> 2L).foreach { case (day, v) =>
+      val w = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(new org.apache.hadoop.fs.Path(s"$nanos/date_id=$day/part-00000.parquet"))
+        .withType(schema).build()
+      try w.write(new org.apache.parquet.example.data.simple.SimpleGroupFactory(schema)
+        .newGroup().append("ts", 1704067200000000000L + v).append("v", v))
+      finally w.close()
+    }
+    assert(PartitionedLake.read(spark, nanos).schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    assertReadParity(nanos, col("date_id") === "2024-01-02", col("date_id") < "2024-01-02")
+
+    // a missing path, and a lake with no data file, fail as Spark's reader does
+    val empty = lake("empty")
+    Files.createDirectory(Paths.get(empty, "date_id=2024-01-01"))
+    Files.createFile(Paths.get(empty, "_SUCCESS"))
+    Seq(s"$empty/missing", empty).foreach { dir =>
+      val ours = intercept[AnalysisException](PartitionedLake.read(spark, dir))
+      val reference = intercept[AnalysisException](spark.read.parquet(dir))
+      assert(ours.getClass == reference.getClass && ours.getCondition == reference.getCondition)
+    }
+  }
+
+  test("read lists only the partitions a filter keeps, under the lake root Spark reports") {
+    val dir = Files.createTempDirectory("graft_lake_prune").toString
+    // 40 days (above Spark's 32-path parallel-listing threshold), two files each
+    PartitionedLake.writeAll(spark.range(400).selectExpr("id",
+      "date_add(DATE'2024-01-01', CAST(id % 40 AS INT)) AS date_id").repartition(2), dir, Seq("date_id"))
+    assert(new java.io.File(s"$dir/date_id=2024-01-05").listFiles()
+      .count(_.getName.endsWith(".parquet")) == 2)
+
+    // job descriptions in start order; a marker job's start is delivered
+    // after the starts of every job submitted before it
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def marker(name: String): Unit = {
+      spark.sparkContext.setJobDescription(name)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      val deadline = System.nanoTime() + 10000000000L
+      while (!started.contains(name) && System.nanoTime() < deadline) Thread.sleep(10)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val oneDay = try {
+      val df = PartitionedLake.read(spark, dir).filter(col("date_id") === "2024-01-05")
+      marker("read")
+      assert(df.collect().length == 10)
+      marker("action")
+      df
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = started.asScala.toSeq
+    // no job between read and the action, and no listing job in it
+    assert(jobs.head == "read", s"jobs before the action: $jobs")
+    assert(!jobs.exists(_.startsWith("Listing leaf files")), s"jobs: $jobs")
+
+    // the executed scan opened exactly that partition's files
+    val plan = oneDay.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val scans = plan.collect { case s: FileSourceScanExec => s }
+    assert(scans.map(_.metrics("numFiles").value) == Seq(2L))
+
+    // the relation's root is the qualified lake root Spark's own index
+    // reports, the path any read-while-overwrite check compares against
+    def roots(df: DataFrame) = df.queryExecution.analyzed.collect {
+      case LogicalRelationWithTable(r: HadoopFsRelation, _) => r.location.rootPaths
+    }
+    assert(roots(PartitionedLake.read(spark, dir)) == roots(spark.read.parquet(dir)))
+    // a refresh from a lazy read of the same lake still commits the day
+    // after the scan has read it
+    PartitionedLake.deleteInsert(PartitionedLake.read(spark, dir)
+      .filter(col("date_id") === "2024-01-05"), dir, Seq("date_id"))
+    assert(PartitionedLake.read(spark, dir).count() == 400)
+
+    // refresh re-walks the lake: a day written after the read shows up in
+    // a filtered scan, as it does for Spark's own index
+    val ours = PartitionedLake.read(spark, dir)
+    val reference = spark.read.parquet(dir)
+    PartitionedLake.deleteInsert(spark.range(5).selectExpr("id", "DATE'2024-03-01' AS date_id"),
+      dir, Seq("date_id"))
+    Seq(ours, reference).foreach { df =>
+      df.queryExecution.analyzed.foreach {
+        case LogicalRelationWithTable(r: HadoopFsRelation, _) => r.location.refresh()
+        case _ =>
+      }
+      assert(df.filter(col("date_id") === "2024-03-01").count() == 5)
+    }
+  }
+
+  test("jdbc load that fails rethrows its error, keeps the target rows and drops the stage") {
+    val url = "jdbc:derby:memory:graftdb_fail;create=true"
+    val props = new java.util.Properties()
+    val seed = Seq(("2024-01-01", "old", 1.0), ("2024-01-02", "keep", 3.0))
+      .toDF("date_id", "city", "temp")
+    seed.write.mode("overwrite")
+      .option("createTableColumnTypes", "date_id VARCHAR(10), city VARCHAR(5)")
+      .jdbc(url, "dashboard.weather", props)
+    def target = spark.read.jdbc(url, "dashboard.weather", props)
+      .select("date_id", "city", "temp").as[(String, String, Double)].collect().toSet
+    def stages = {
+      val c = java.sql.DriverManager.getConnection(url, props)
+      try {
+        val r = c.createStatement().executeQuery(
+          "SELECT COUNT(*) FROM SYS.SYSTABLES WHERE UPPER(TABLENAME) LIKE '%STAGE%'")
+        r.next(); r.getInt(1)
+      } finally c.close()
+    }
+    // the insert from the stage fails after the keyed delete: a city longer
+    // than the target column
+    val tooLong = Seq(("2024-01-01", "much_too_long", 9.0)).toDF("date_id", "city", "temp")
+    intercept[java.sql.SQLException] {
+      JdbcSink.load(tooLong, url, "dashboard", "weather", "date_id", "2024-01-01", props, numPartitions = 1)
+    }
+    assert(target == seed.as[(String, String, Double)].collect().toSet)
+    assert(stages == 0)
+    // the distributed staging load itself fails
+    val broken = Seq(("2024-01-01", "new", 9.0)).toDF("date_id", "city", "temp")
+      .withColumn("temp", when(col("temp") > 0, raise_error(lit("stage load failed"))).otherwise(col("temp")))
+    val e = intercept[Exception] {
+      JdbcSink.load(broken, url, "dashboard", "weather", "date_id", "2024-01-01", props, numPartitions = 1)
+    }
+    assert(e.toString.contains("stage load failed") || Option(e.getCause).exists(_.toString.contains("stage load failed")))
+    assert(target == seed.as[(String, String, Double)].collect().toSet)
+    assert(stages == 0)
   }
 }
