@@ -2,7 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** One row of the request table driving a distributed API ingest. */
 case class FetchRequest(request_id: Long, url: String)
@@ -106,19 +107,47 @@ object ApiIngest {
   /** Payload rows fetched OUTSIDE Spark (a driver-side batch loop, an
     * upstream queue, a replayed capture) lifted into a DataFrame — the
     * entry point when the fetch cannot run on executors at all.
+    *
+    * Slices are sized by the bytes the driver holds (payload plus URL
+    * lengths), the way Spark sizes file splits: `split =
+    * min(maxPartitionBytes, max(openCostInBytes, bytes / parallelism))`
+    * from `spark.sql.files.*`, and `ceil(bytes / split)` slices, at least
+    * 1 and at most the `createDataFrame` slice count. A day of payloads
+    * (tens of KB) is one slice, so each lake it lands in gets one task and
+    * one file per partition; 100 MB on 4 cores is still 4 slices. The
+    * slices are a narrow `coalesce` of the local relation, no shuffle.
     */
-  def fromFetchedBatches(spark: SparkSession, batches: Seq[FetchResult]): DataFrame =
-    spark.createDataFrame(batches)
+  def fromFetchedBatches(spark: SparkSession, batches: Seq[FetchResult]): DataFrame = {
+    val conf = spark.sessionState.conf
+    // the slice count `createDataFrame`'s local scan would use
+    val parallelism = conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+      .getOrElse(spark.sparkContext.defaultParallelism)
+    def len(s: String): Long = if (s == null) 0L else s.length
+    val bytes = batches.iterator.map(b => len(b.payload) + len(b.url)).sum
+    val split = math.max(1L, math.min(conf.filesMaxPartitionBytes,
+      math.max(conf.filesOpenCostInBytes, bytes / parallelism)))
+    val slices = math.max(1L, math.min((bytes + split - 1) / split,
+      math.min(batches.size, parallelism).toLong)).toInt
+    spark.createDataFrame(batches).coalesce(slices)
+  }
 
   /** Successful payloads parsed with an explicit schema and flattened to
     * one typed row per payload, keyed by request_id. Rows that fetched
     * with a non-200 status are excluded here — read them from the fetch
-    * result directly to quarantine/retry (they carry the raw body).
+    * result directly to quarantine/retry (they carry the raw body). So are
+    * 200s whose body does not parse into `schema`: not JSON, empty, or a
+    * value of the wrong type (`"temp":"hot"`). A field the body lacks
+    * stays null.
     */
-  def flattenPayloads(fetched: DataFrame, schema: StructType): DataFrame =
+  def flattenPayloads(fetched: DataFrame, schema: StructType): DataFrame = {
+    val corrupt = "_corrupt_record"
+    require(!schema.fieldNames.contains(corrupt), s"payload schema must not declare $corrupt")
     fetched.filter(col("status") === 200)
-      .withColumn("__p", from_json(col("payload"), schema))
+      .withColumn("__p", from_json(col("payload"), schema.add(corrupt, StringType),
+        Map("columnNameOfCorruptRecord" -> corrupt)))
+      .filter(col("__p").isNotNull && col(s"__p.$corrupt").isNull)
       .select(col("request_id") +: schema.fieldNames.map(f => col(s"__p.$f")): _*)
+  }
 
   /** Deterministic stand-in for a weather-API server, keyed entirely off
     * the request URL (`...?key=<k>&q=<name>`): metrics are exact-in-double

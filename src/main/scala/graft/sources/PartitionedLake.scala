@@ -1,6 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.Path
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{GraftLakeBridge, HadoopFsRelation, LogicalRelationWithTable}
 
 /** Partitioned parquet lake with the reference's delete-then-insert refresh.
   *
@@ -24,12 +27,35 @@ object PartitionedLake {
     * partitions are small and numerous (the [[HiddenPartitioning]]
     * grid does), keep multiple tasks per partition when partitions are
     * large, and use [[compact]] / [[overBudgetPartitions]] to repair
-    * fragmentation after the fact. */
-  def writeAll(df: DataFrame, path: String, partCols: Seq[String]): Unit =
+    * fragmentation after the fact. Payloads lifted by
+    * [[ApiIngest.fromFetchedBatches]] arrive already sliced by their
+    * bytes, so a small batch writes one file per partition.
+    *
+    * The overwrite deletes `path` before the plan runs, so a plan that
+    * reads `path`, or a directory under it, is rejected with Spark's
+    * `UNSUPPORTED_OVERWRITE.PATH` error before anything is deleted.
+    * Materialize such a frame first (`localCheckpoint`), as [[compact]]
+    * does. */
+  def writeAll(df: DataFrame, path: String, partCols: Seq[String]): Unit = {
+    verifyNotReadPath(df, path)
     df.write
       .mode("overwrite")
       .partitionBy(partCols: _*)
       .parquet(path)
+  }
+
+  /** Throws when `df`'s plan scans `path` or a path under it. Spark's own
+    * check (`DDLUtils.verifyNotReadPath`) only catches a scan of `path`
+    * itself, and only for SQL inserts. */
+  private def verifyNotReadPath(df: DataFrame, path: String): Unit = {
+    val raw = new Path(path)
+    val out = raw.getFileSystem(df.sparkSession.sessionState.newHadoopConf()).makeQualified(raw)
+    val read = df.queryExecution.analyzed.collectWithSubqueries {
+      case LogicalRelationWithTable(fs: HadoopFsRelation, _) => fs.location.rootPaths
+    }.flatten
+    if (read.exists(p => Iterator.iterate(p)(_.getParent).takeWhile(_ != null).contains(out)))
+      throw GraftLakeBridge.cannotOverwritePathBeingRead(out)
+  }
 
   /** Idempotent per-partition refresh: replaces only the partitions present
     * in `df` (the reference's delete-insert), leaving the rest intact.
@@ -115,7 +141,7 @@ object PartitionedLake {
       partCol: String,
       value: String): Unit = {
     // the writer escapes partition values (`a:b` is stored as `a%3Ab`)
-    val dir = new org.apache.hadoop.fs.Path(path,
+    val dir = new Path(path,
       org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.getPartitionPathString(partCol, value))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(dir)) fs.delete(dir, true)

@@ -13,7 +13,8 @@ import org.apache.spark.sql.types.StructType
 /** Bridge to the package-private pieces of Spark's parquet relation
   * resolution that `graft.sources.LakeFileIndex` reuses, so a lake read
   * infers exactly what `spark.read.parquet` infers and fails with the same
-  * errors.
+  * errors; `graft.sources.PartitionedLake` raises Spark's own overwrite
+  * error through it too.
   */
 object GraftLakeBridge {
 
@@ -58,4 +59,7 @@ object GraftLakeBridge {
   def pathNotFound(path: Path): Throwable = QueryCompilationErrors.dataPathNotExistError(path.toString)
 
   def unableToInferSchema(): Throwable = QueryCompilationErrors.dataSchemaNotSpecifiedError("Parquet")
+
+  def cannotOverwritePathBeingRead(path: Path): Throwable =
+    QueryCompilationErrors.cannotOverwritePathBeingReadFromError(path.toString)
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelationWithTable}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{JdbcSink, PartitionedLake}
+import graft.sources.{ApiIngest, FetchResult, JdbcSink, PartitionedLake}
 
 class LakeSpec extends SparkSuite {
   import spark.implicits._
@@ -402,5 +402,66 @@ class LakeSpec extends SparkSuite {
     assert(e.toString.contains("stage load failed") || Option(e.getCause).exists(_.toString.contains("stage load failed")))
     assert(target == seed.as[(String, String, Double)].collect().toSet)
     assert(stages == 0)
+  }
+
+  test("writeAll rejects a plan that reads its own output and keeps the lake") {
+    val dir = Files.createTempDirectory("graft_lake_self").toString
+    PartitionedLake.writeAll(Seq(("2024-01-01", 1L), ("2024-01-02", 2L)).toDF("date_id", "v"),
+      dir, Seq("date_id"))
+    def files: Map[String, Seq[Byte]] = {
+      val walk = Files.walk(Paths.get(dir))
+      try walk.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(f => Paths.get(dir).relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+      finally walk.close()
+    }
+    val before = files
+    Seq(
+      PartitionedLake.read(spark, dir).filter(col("date_id") === "2024-01-01"),
+      spark.read.parquet(dir).filter(col("v") > 0),
+      spark.read.parquet(s"$dir/date_id=2024-01-02").withColumn("date_id", lit("2024-01-03")),
+      Seq("2024-01-01").toDF("date_id")
+        .join(PartitionedLake.read(spark, dir), Seq("date_id"), "left_semi")
+        .withColumn("v", lit(0L))
+    ).foreach { df =>
+      val e = intercept[AnalysisException](PartitionedLake.writeAll(df, dir, Seq("date_id")))
+      assert(e.getCondition == "UNSUPPORTED_OVERWRITE.PATH")
+      assert(files == before)
+    }
+    // a sibling whose name extends the lake's is not under it
+    val sibling = dir + "_copy"
+    PartitionedLake.writeAll(spark.read.parquet(dir), sibling, Seq("date_id"))
+    PartitionedLake.writeAll(spark.read.parquet(sibling).filter(col("v") > 1), dir, Seq("date_id"))
+    assert(PartitionedLake.read(spark, dir).select("v").as[Long].collect().toSeq == Seq(2L))
+    // a materialized frame no longer reads the lake
+    PartitionedLake.writeAll(PartitionedLake.read(spark, dir).withColumn("v", col("v") * 10)
+      .localCheckpoint(true), dir, Seq("date_id"))
+    assert(PartitionedLake.read(spark, dir).select("v").as[Long].collect().toSeq == Seq(20L))
+  }
+
+  test("a fetched day lands as one file per partition in bronze and in silver") {
+    import org.apache.spark.sql.types._
+    val root = Files.createTempDirectory("graft_lake_files").toString
+    val (bronze, silver) = (s"$root/bronze", s"$root/silver")
+    val schema = StructType(Seq(StructField("name", StringType), StructField("country", StringType),
+      StructField("temp", DoubleType)))
+    def land(day: String): Unit = {
+      val batch = (0 until 240).map { i =>
+        FetchResult(i.toLong, s"https://api.example.test/weather?q=City$i", 200,
+          s"""{"name":"City$i","country":"${if (i % 2 == 0) "US" else "CA"}","temp":${i * 0.5}}""")
+      }
+      val flat = ApiIngest.flattenPayloads(ApiIngest.fromFetchedBatches(spark, batch), schema)
+        .withColumn("date_id", lit(day))
+      PartitionedLake.deleteInsert(flat, bronze, Seq("date_id"))
+      PartitionedLake.deleteInsert(
+        PartitionedLake.read(spark, bronze).filter(col("date_id") === day && col("country") === "US")
+          .withColumn("date_id", col("date_id").cast("string")),
+        silver, Seq("date_id"))
+    }
+    Seq("2024-01-01", "2024-01-02").foreach(land)
+    def parquetFiles(lake: String, day: String) = new java.io.File(s"$lake/date_id=$day").listFiles()
+      .count(_.getName.endsWith(".parquet"))
+    for (lake <- Seq(bronze, silver); day <- Seq("2024-01-01", "2024-01-02"))
+      assert(parquetFiles(lake, day) == 1, s"$lake date_id=$day")
+    assert(PartitionedLake.read(spark, silver).count() == 240)
   }
 }
