@@ -28,9 +28,15 @@ object Verify {
       val worker = new Thread(() => {
         spark.sparkContext
           .setJobGroup(s"verify-$name", name, interruptOnCancel = true)
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable => Failure.report("verify", name, e) }
+        try {
+          // which branch each driver finisher took (ROADMAP aim 4)
+          val (_, taken) = graft.operators.DriverFinisher.observe(None) {
+            fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+              .parquet(s"$outDir/$name")
+          }
+          if (taken.nonEmpty) System.err.println(s"[verify] $name finishers: " +
+            taken.map { case (op, b) => s"$op=$b" }.mkString(","))
+        } catch { case e: Throwable => Failure.report("verify", name, e) }
         finally spark.sparkContext.clearJobGroup()
       }, s"verify-$name")
       worker.setDaemon(true)

@@ -436,81 +436,80 @@ object Dedup {
       df: DataFrame,
       idCol: String,
       pairs: DataFrame,
-      maxIter: Int = 10,
-      driverMaxRows: Long = 4000000L): DataFrame = {
+      maxIter: Int = 10): DataFrame = {
     // materialize once: the loop would otherwise re-execute the entire
     // upstream candidate-pair DAG on every propagation iteration
     val rawPairs = pairs.select(col("id_a"), col("id_b")).localCheckpoint(true)
     // DRIVER-SIDE UNION-FIND when the pair list and the node set are
-    // collectable (the k-truss/hlFromCensus posture): the distributed
-    // min-label loop below pays 4-6 Spark jobs PER ITERATION, and the
-    // graphs routed here (near-dup candidate pairs, contracted root
-    // graphs, word-similarity pairs) are almost always metadata-sized
-    // while the corpus they came from is not. Semantics are identical by
+    // collectable: the distributed min-label loop below pays 4-6 Spark
+    // jobs PER ITERATION, and the graphs routed here (near-dup candidate
+    // pairs, contracted root graphs, word-similarity pairs) are almost
+    // always metadata-sized while the corpus they came from is not. Semantics are identical by
     // construction: the representative is the component's minimum id
     // under Spark's own ordering (numeric, or unsigned UTF-8 bytes for
     // strings — UTF8String.compareTo), edges with an endpoint outside
     // `df`'s node set contribute nothing (exactly as the propagation
     // join drops them), and one output row is emitted per input row.
-    // A billion-node graph never reaches the driver: both counts are
-    // checked against the guard and the synchronized loop still runs.
+    // The size is the pair count, then the node count.
     val idt = df.schema(df.schema.fieldIndex(idCol)).dataType
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
     val driverEligible =
       idt == LongType || idt == IntegerType || idt == StringType
-    if (driverEligible && rawPairs.count() <= driverMaxRows) {
+    lazy val nodeRows = df.select(col(idCol)).localCheckpoint(true)
+    val budget = DriverFinisher.DedupRows
+    if (DriverFinisher.fits("dupClusters", budget, driverEligible) {
+        val nPairs = rawPairs.count()
+        if (nPairs > budget) nPairs else nodeRows.count()
+      }) {
       val spark = df.sparkSession
-      val nodeRows = df.select(col(idCol)).localCheckpoint(true)
-      if (nodeRows.count() <= driverMaxRows) {
-        val nodeVals: Array[Any] =
-          nodeRows.collect().map(_.get(0))
-        val pairRows: Array[(Any, Any)] =
-          rawPairs.collect().map(r => (r.get(0), r.get(1)))
-        val idx = new java.util.HashMap[Any, Integer](nodeVals.length * 2)
-        var i = 0
-        while (i < nodeVals.length) {
-          if (!idx.containsKey(nodeVals(i))) idx.put(nodeVals(i), idx.size())
-          i += 1
-        }
-        val n = idx.size()
-        val parent = Array.tabulate(n)(identity)
-        def find(x: Int): Int = {
-          var r = x
-          while (parent(r) != r) r = parent(r)
-          var c = x
-          while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-          r
-        }
-        pairRows.foreach { case (a, b) =>
-          val ia = idx.get(a); val ib = idx.get(b)
-          if (ia != null && ib != null) {
-            val ra = find(ia); val rb = find(ib)
-            if (ra != rb) parent(ra) = rb
-          }
-        }
-        // component minimum under Spark's ordering
-        val lt = sparkLt(idt)
-        val minOf = new Array[Any](n)
-        val it = idx.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          val r = find(e.getValue.intValue())
-          if (minOf(r) == null || lt(e.getKey, minOf(r))) minOf(r) = e.getKey
-        }
-        import org.apache.spark.sql.Row
-        import org.apache.spark.sql.types.{StructField, StructType}
-        val outRows: Array[Row] = nodeVals.map { v =>
-          Row(v, minOf(find(idx.get(v).intValue())))
-        }
-        val schema = StructType(Seq(
-          StructField(idCol, idt), StructField("cluster_rep", idt)))
-        val slices = math.max(1, outRows.length / 500000 + 1)
-        return spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(outRows),
-            slices),
-          schema)
+      val nodeVals: Array[Any] =
+        nodeRows.collect().map(_.get(0))
+      val pairRows: Array[(Any, Any)] =
+        rawPairs.collect().map(r => (r.get(0), r.get(1)))
+      val idx = new java.util.HashMap[Any, Integer](nodeVals.length * 2)
+      var i = 0
+      while (i < nodeVals.length) {
+        if (!idx.containsKey(nodeVals(i))) idx.put(nodeVals(i), idx.size())
+        i += 1
       }
+      val n = idx.size()
+      val parent = Array.tabulate(n)(identity)
+      def find(x: Int): Int = {
+        var r = x
+        while (parent(r) != r) r = parent(r)
+        var c = x
+        while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+        r
+      }
+      pairRows.foreach { case (a, b) =>
+        val ia = idx.get(a); val ib = idx.get(b)
+        if (ia != null && ib != null) {
+          val ra = find(ia); val rb = find(ib)
+          if (ra != rb) parent(ra) = rb
+        }
+      }
+      // component minimum under Spark's ordering
+      val lt = sparkLt(idt)
+      val minOf = new Array[Any](n)
+      val it = idx.entrySet().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        val r = find(e.getValue.intValue())
+        if (minOf(r) == null || lt(e.getKey, minOf(r))) minOf(r) = e.getKey
+      }
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types.{StructField, StructType}
+      val outRows: Array[Row] = nodeVals.map { v =>
+        Row(v, minOf(find(idx.get(v).intValue())))
+      }
+      val schema = StructType(Seq(
+        StructField(idCol, idt), StructField("cluster_rep", idt)))
+      val slices = math.max(1, outRows.length / 500000 + 1)
+      return spark.createDataFrame(
+        spark.sparkContext.parallelize(
+          scala.collection.immutable.ArraySeq.unsafeWrapArray(outRows),
+          slices),
+        schema)
     }
     val edges = rawPairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionAll(rawPairs.select(col("id_b").as("src"), col("id_a").as("dst")))
@@ -591,22 +590,20 @@ object Dedup {
     * against the changed-root map).
     */
   /** [[updateClustersDelta]]'s driver fast path: None when ineligible
-    * (non-collectable types) or past the guard — the caller then runs the
-    * distributed loop.
+    * (non-collectable types) or past the budget — the caller then runs
+    * the distributed loop.
     */
   private def driverDeltaFastPath(
       comp: DataFrame,
-      e: DataFrame,
-      driverMaxRows: Long): Option[DataFrame] = {
+      e: DataFrame): Option[DataFrame] = {
     val idt = comp.schema(comp.schema.fieldIndex("node")).dataType
     import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
-    if (idt != LongType && idt != IntegerType && idt != StringType) return None
-    val lim = math.min(driverMaxRows + 1, Int.MaxValue.toLong - 1).toInt
-    val eRows = e.limit(lim).collect()
-    if (eRows.length > driverMaxRows) return None
-    val knownDf = comp.select(col("node"), col("cluster_rep"))
-    val compRows = knownDf.limit(lim).collect()
-    if (compRows.length > driverMaxRows) return None
+    val collected = DriverFinisher.collectWithin("updateClustersDelta",
+      DriverFinisher.DedupRows,
+      idt == LongType || idt == IntegerType || idt == StringType)(
+      e, comp.select(col("node"), col("cluster_rep")))
+    if (collected.isEmpty) return None
+    val Seq(eRows, compRows) = collected.get
     val spark = comp.sparkSession
     val lt = sparkLt(idt)
     val rootOf = new java.util.HashMap[Any, Any](compRows.length * 2)
@@ -683,13 +680,12 @@ object Dedup {
   def updateClustersDelta(
       comp: DataFrame,
       newEdges: DataFrame,
-      maxIter: Int = 10,
-      driverMaxRows: Long = 4000000L): DataFrame = {
+      maxIter: Int = 10): DataFrame = {
     val e = newEdges.select(col("id_a"), col("id_b")).localCheckpoint(true)
-    // DRIVER FAST PATH (the dupClusters/k-truss guarded-finisher posture):
-    // the distributed delta below pays ~12 jobs of checkpoints, semi/anti
-    // joins and the contracted-graph propagation per call — and it runs
-    // once per STREAMING MICRO-BATCH in componentsMaintenance. When both
+    // DRIVER FAST PATH: the distributed delta below pays ~12 jobs of
+    // checkpoints, semi/anti joins and the contracted-graph propagation
+    // per call — and it runs once per STREAMING MICRO-BATCH in
+    // componentsMaintenance. When both
     // the standing assignment and the edge batch are collectable, one
     // union-find over the collected rows produces the identical delta:
     // same batch-endpoint root lookup, same contracted-edge min-label
@@ -698,10 +694,10 @@ object Dedup {
     // one per distinct fresh endpoint. Edges with a NULL endpoint
     // contract to nothing (the distributed equijoin drops them) while
     // the non-null partner still enters as fresh — replicated below.
-    // limit(guard+1).collect doubles as the guard check: a state or
-    // batch past the guard falls through to the distributed loop after
-    // one bounded job, never a full collect.
-    val fast = driverDeltaFastPath(comp, e, driverMaxRows)
+    // The guard collects (DriverFinisher.collectWithin): a state or batch
+    // past the budget falls through to the distributed loop after one
+    // bounded job, never a full collect.
+    val fast = driverDeltaFastPath(comp, e)
     if (fast.isDefined) return fast.get
     val newNodes = e.select(col("id_a").as("node"))
       .unionAll(e.select(col("id_b").as("node"))).distinct()

@@ -405,9 +405,7 @@ object Drift {
     * formulation the oracle still replays (the count function is
     * monotone, so "min d with count ≥ r" is the same d).
     */
-  def hlFromCensus(
-      censusDf: DataFrame,
-      driverSelectMaxCensus: Long = 2000000L): DataFrame = {
+  def hlFromCensus(censusDf: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
     val d38 = DecimalType(38, 0)
@@ -440,11 +438,9 @@ object Drift {
     // Spark jobs (each distributed probe round below costs a full
     // crossJoin+window job, ~1 s of fixed overhead × ~9 rounds at
     // sf0.1). Same BigInt counts, same "min d with count >= rank"
-    // invariant — bit-identical d1/d2. Above the guard (a census that
-    // genuinely tracks a huge near-unique domain) the batched
-    // distributed probes below run instead.
-    val cenSize = cen.count()
-    if (cenSize <= driverSelectMaxCensus) {
+    // invariant — bit-identical d1/d2.
+    if (DriverFinisher.fits("hlFromCensus", DriverFinisher.HlCensus)(
+        cen.count())) {
       val rows = cen.orderBy(col("v")).collect()
       val aIdx = rows.indices.filter(i => rows(i).getLong(1) > 0L)
       val av = aIdx.map(i => rows(i).getLong(0)).toArray

@@ -56,7 +56,7 @@ object Learn {
     require(k >= 2 && k <= 16 && iters >= 1 && iters <= 16)
     val cen = census.getOrElse(valueCensus(df, valueCol))
     // DRIVER-PACED loop, driver-LOCAL arithmetic when the census is
-    // collectable (the Graph-finisher posture): the init rank lookups
+    // collectable: the init rank lookups
     // were k jobs and every Lloyd round one census aggregate + collect —
     // the elbow sweep paid ~(k + iters) jobs per k. All replayed steps
     // are deterministic JVM library arithmetic identical to the
@@ -64,25 +64,11 @@ object Learn {
     // exact integer sn/sv sums, round(sv/sn, 9) =
     // BigDecimal.valueOf(q).setScale(9, HALF_UP).doubleValue. Callers'
     // assignment/WSS/silhouette stages stay distributed over the census.
-    // Distributed loop retained above the guard.
-    val censusRows = cen.count()
-    if (censusRows <= 4000000L) {
-      import scala.collection.mutable
-      val parts = cen.select(col("v"), col("n")).rdd.mapPartitions { it =>
-        val xv = mutable.ArrayBuilder.make[Long]
-        val xn = mutable.ArrayBuilder.make[Long]
-        it.foreach { r => xv += r.getLong(0); xn += r.getLong(1) }
-        Iterator((xv.result(), xn.result()))
-      }.collect()
-      val nC = censusRows.toInt
-      val vs = new Array[Long](nC); val ns = new Array[Long](nC)
-      var p0 = 0
-      parts.foreach { case (xv, xn) =>
-        System.arraycopy(xv, 0, vs, p0, xv.length)
-        System.arraycopy(xn, 0, ns, p0, xn.length)
-        p0 += xv.length
-      }
-      require(p0 == nC, "kMeans census collect raced a changing frame")
+    if (DriverFinisher.fits("lloydCore", DriverFinisher.LloydCensus)(
+        cen.count())) {
+      val Array(vs, ns) =
+        DriverFinisher.collectLongs(cen.select(col("v"), col("n")))
+      val nC = vs.length
       // sort by value (census rows are unique per v)
       val order = (0 until nC).sortBy(vs(_)).toArray
       var nTotal = 0L

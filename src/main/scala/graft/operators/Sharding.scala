@@ -118,8 +118,7 @@ object Sharding {
   def stableMatch(
       prefs: DataFrame,
       cap: Int,
-      maxRounds: Int = 200,
-      driverMaxRows: Long = 4000000L): DataFrame = {
+      maxRounds: Int = 200): DataFrame = {
     require(cap >= 1 && maxRounds >= 1)
     def fresh(df: DataFrame): DataFrame = {
       val d = df.localCheckpoint(true)
@@ -130,21 +129,20 @@ object Sharding {
       col("t_score").cast("long").as("t_score"))
       .localCheckpoint(true)
     // DRIVER-SIDE SEQUENTIAL DEFERRED ACCEPTANCE when the preference
-    // spine is collectable (the k-truss/union-find posture): the
-    // synchronized loop below pays ~4 jobs per proposal round and runs
-    // as many rounds as the longest bump chain. DA's outcome is
+    // spine is collectable: the synchronized loop below pays ~4 jobs per
+    // proposal round and runs as many rounds as the longest bump chain.
+    // DA's outcome is
     // proposal-order invariant (the agent-optimal stable matching is
     // unique under the strict orders used here: a_rank on the agent
     // side, (t_score, agent) on the target side), so a free-agent-queue
     // sequential pass lands the identical matching in one collect.
-    // Above the guard — a 100 TB agent table — the synchronized
-    // distributed loop still runs.
     val agentT = spine.schema(spine.schema.fieldIndex("agent")).dataType
     val targetT = spine.schema(spine.schema.fieldIndex("target")).dataType
     import org.apache.spark.sql.types.{IntegerType, LongType}
     val numericIds = Seq(agentT, targetT)
       .forall(t => t == LongType || t == IntegerType)
-    if (numericIds && spine.count() <= driverMaxRows) {
+    if (DriverFinisher.fits("stableMatch", DriverFinisher.MatchRows,
+        numericIds)(spine.count())) {
       val spark = spine.sparkSession
       import scala.collection.mutable
       def asLong(v: Any): Long = v match {

@@ -163,8 +163,7 @@ object Similarity {
       vecCol: String,
       k: Int,
       iters: Int = 2,
-      metric: String = "cosine",
-      driverMaxElems: Long = 4000000L): DataFrame = {
+      metric: String = "cosine"): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val spark = corpus.sparkSession
@@ -180,8 +179,8 @@ object Similarity {
         .collect().toSeq.zipWithIndex
         .map { case (r, i) => (i, r.getSeq[Double](0)) }
     // DRIVER-LOCAL Lloyd rounds when the corpus vectors are collectable
-    // (the Graph-finisher posture; guard on total ELEMENTS — rows×dims —
-    // since memory is what the collect spends). Every replayed step is
+    // (the size is total ELEMENTS — rows×dims — since memory is what the
+    // collect spends). Every replayed step is
     // the same JVM arithmetic the expressions run: the [[graft.plans
     // .VecCosine]]/[[graft.plans.VecL2Sq]] left-to-right double folds,
     // the assign() argmin ordering (score +0.0 so −0.0 ties like Spark,
@@ -189,20 +188,21 @@ object Similarity {
     // double→DECIMAL(30,12) HALF_UP cast, exact decimal sum, and
     // doubleValue/count division. The previous loop paid (assign +
     // recompute-collect) jobs per round for every trainer in the
-    // ANN/IVF/PQ family. Distributed loop retained above the guard.
-    val nRows = corpus.count()
+    // ANN/IVF/PQ family.
     val dims0 = cur.headOption.map(_._2.length.toLong).getOrElse(0L)
-    if (nRows * math.max(dims0, 1L) <= driverMaxElems) {
-      val vecs: Array[Array[Double]] = corpus
-        .select(transform(col(vecCol), x => x.cast("double")).as("v"))
-        .collect().map(_.getSeq[Double](0).toArray)
+    val driverVecs =
+      if (DriverFinisher.fits("kmeansCentroids", DriverFinisher.LloydElems)(
+          corpus.count() * math.max(dims0, 1L)))
+        replayableVectors("kmeansCentroids", corpus, vecCol, dims0)
+      else None
+    if (driverVecs.isDefined) {
+      val vecs = driverVecs.get
       val rm = java.math.RoundingMode.HALF_UP
       // a corpus smaller than k yields fewer init centroids — size to it
       val kk = cur.length
       for (_ <- 0 until iters) {
         val cents = cur.map(_._2.toArray).toArray
-        val sums = Array.fill(kk, cents.map(_.length).max max 1)(
-          java.math.BigDecimal.ZERO)
+        val sums = Array.fill(kk, dims0.toInt)(java.math.BigDecimal.ZERO)
         val cnts = new Array[Long](kk)
         vecs.foreach { v =>
           var best = -1; var bestScore = 0.0
@@ -267,6 +267,25 @@ object Similarity {
       cur = cur.map { case (cid, cvec) => (cid, recomputed.getOrElse(cid, cvec)) }
     }
     literal(cur)
+  }
+
+  /** The corpus vectors as doubles when the driver Lloyd can replay them:
+    * every vector present and `dims` wide, every element finite. The
+    * distributed mean casts NaN and ±Inf to a null decimal that its sum
+    * skips but its count keeps, which the driver sums do not model, so
+    * such corpora take the distributed loop. */
+  private def replayableVectors(op: String, corpus: DataFrame,
+      vecCol: String, dims: Long): Option[Array[Array[Double]]] = {
+    val vs = corpus
+      .select(transform(col(vecCol), x => x.cast("double")).as("v"))
+      .collect().map(r => if (r.isNullAt(0)) null else r.getSeq[Any](0))
+    val ok = vs.forall(v => v != null && v.length == dims && v.forall {
+      case d: Double => !d.isNaN && !d.isInfinite
+      case _ => false
+    })
+    if (DriverFinisher.accepts(s"$op.values", ok))
+      Some(vs.map(_.map(_.asInstanceOf[Double]).toArray))
+    else None
   }
 
   /** Nearest-centroid assignment: (idCol, cid). `metric` is "cosine"
@@ -571,8 +590,7 @@ object Similarity {
       dims: Int,
       subspaces: Int,
       codebookSize: Int,
-      iters: Int = 2,
-      driverMaxElems: Long = 4000000L): DataFrame = {
+      iters: Int = 2): DataFrame = {
     require(dims % subspaces == 0, s"$dims dims not divisible into $subspaces subspaces")
     val sub = dims / subspaces
     val spark = corpus.sparkSession
@@ -603,8 +621,7 @@ object Similarity {
       for { m <- 0 until subspaces; (r, i) <- initVecs }
         yield (m, i, r.getSeq[Double](0).slice(m * sub, (m + 1) * sub))
     // DRIVER-LOCAL Lloyd rounds when the corpus vectors are collectable —
-    // the identical guard/arithmetic posture as [[kmeansCentroids]] above
-    // (rows×dims ≤ 4M elements; distributed loop retained past it). Every
+    // the identical size and arithmetic as [[kmeansCentroids]] above. Every
     // replayed step is the same JVM arithmetic the distributed expressions
     // run: the [[graft.plans.VecL2Sq]] left-to-right fold over the slice
     // bounds the old slice+l2sq pair produced, min(struct(d, cid)) argmin
@@ -612,13 +629,17 @@ object Similarity {
     // per-(sub, cid, pos) exact DECIMAL(30,12) sums (HALF_UP cast of each
     // double) and the doubleValue/count division. The distributed loop
     // paid (assign-groupBy + explode-recompute-collect) jobs per round.
-    val nRows = corpus.count()
     val dims0 = initVecs.headOption
       .map(_._1.getSeq[Double](0).length.toLong).getOrElse(0L)
-    if (nRows * math.max(dims0, 1L) <= driverMaxElems) {
-      val vecs: Array[Array[Double]] = corpus
-        .select(transform(col(vecCol), x => x.cast("double")).as("v"))
-        .collect().map(_.getSeq[Double](0).toArray)
+    val driverVecs =
+      if (DriverFinisher.fits("pqTrain", DriverFinisher.LloydElems)(
+          corpus.count() * math.max(dims0, 1L)))
+        replayableVectors("pqTrain", corpus, vecCol, dims0)
+      else None
+    if (driverVecs.isDefined) {
+      val vecs = driverVecs.get
+      // a corpus smaller than codebookSize yields fewer init codewords
+      val kk = initVecs.length
       val rm = java.math.RoundingMode.HALF_UP
       for (_ <- 0 until iters) {
         val cents: Map[(Int, Int), Array[Double]] =
@@ -633,7 +654,7 @@ object Similarity {
             val avail = math.max(v.length - base, 0)
             var best = -1; var bestScore = 0.0
             var cid = 0
-            while (cid < codebookSize) {
+            while (cid < kk) {
               val c = cents((m, cid))
               val n = math.min(math.min(sub, avail), c.length)
               var s = 0.0; var i = 0

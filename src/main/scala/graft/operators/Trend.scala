@@ -671,16 +671,14 @@ object Trend {
       df: DataFrame,
       keyCol: String,
       xCol: String,
-      yCol: String,
-      driverMaxRows: Long = 2000000L,
-      driverMaxPairs: Long = 32000000L): DataFrame = {
+      yCol: String): DataFrame = {
     val base = df.select(col(keyCol).as("__k"),
       col(xCol).cast("long").as("__x"), col(yCol).cast("long").as("__y"))
-    // DRIVER-SIDE SELECTION (the hlFromCensus/kTruss posture): the input
-    // is bucket-domain-sized but the pair frame is key-local QUADRATIC —
-    // the expensive part of the distributed plan is generating ~Σ C(k,2)
-    // slope rows and sorting them inside a per-key window (few keys ⇒
-    // few huge single-task sorts). Below the guards the slopes of one
+    // DRIVER-SIDE SELECTION: the input is bucket-domain-sized but the
+    // pair frame is key-local QUADRATIC — the expensive part of the
+    // distributed plan is generating ~Σ C(k,2) slope rows and sorting
+    // them inside a per-key window (few keys ⇒ few huge single-task
+    // sorts). On the driver the slopes of one
     // key fill one primitive array and the lower median is a quickselect;
     // the arithmetic replicates the distributed plan bit-for-bit:
     // slope = (longΔy).toDouble / (longΔx).toDouble (IEEE division is
@@ -688,12 +686,13 @@ object Trend {
     // median = ascending rank (np+1) div 2, round = Spark's double round
     // (BigDecimal.valueOf setScale(6, HALF_UP)). Keys with no
     // positive-Δx pair emit nothing — exactly the rank filter finding no
-    // row. Above the guards (rows, or total pairs, too big to hold) the
-    // distributed pair/window plan below runs unchanged.
+    // row. Two budgets: the input rows (the guard that collects), then
+    // the total slope pairs.
     val spark = df.sparkSession
-    val capped = base.limit(
-      math.min(driverMaxRows + 1, Int.MaxValue.toLong).toInt).collect()
-    if (capped.length <= driverMaxRows) {
+    val collected = DriverFinisher.collectWithin("theilSenPerKey",
+      DriverFinisher.TheilSenRows)(base)
+    if (collected.isDefined) {
+      val capped = collected.get.head
       import scala.collection.mutable
       val xs = mutable.LinkedHashMap.empty[Any,
         (mutable.ArrayBuilder[Long], mutable.ArrayBuilder[Long])]
@@ -720,7 +719,8 @@ object Trend {
           cnt.valuesIterator.map(c => c * (c - 1) / 2).sum
         (k, x, y, np)
       }.toVector
-      if (!anyNull && keyed.map(_._4).sum <= driverMaxPairs) {
+      if (DriverFinisher.fits("theilSenPerKey.pairs",
+          DriverFinisher.TheilSenPairs, !anyNull)(keyed.map(_._4).sum)) {
         val rm = java.math.RoundingMode.HALF_UP
         // iterative median-of-3 quickselect for the k-th smallest slope
         // (0-based); slopes are finite doubles (Δx ≥ 1), plain < is a

@@ -1591,89 +1591,9 @@ private[queries] object SqlQueries extends Family {
       .groupBy(col("u"), col("v"))
       .agg(count(lit(1)).as("n")).filter(col("n") >= 2)
       .select(col("u"), col("v"))
-    val edges = e0.union(e0.select(col("v"), col("u")))
-      .toDF("src", "dst").localCheckpoint(true)
-    val mEdges = edges.count()
-    // DRIVER-SIDE propagation when the co-purchase pair graph is
-    // collectable (the Graph-finisher posture): each round's winner is
-    // pure integer arithmetic — neighbor-label counts, max count then
-    // min label — identical to the max-struct below. Distributed loop
-    // retained above the guard.
-    if (mEdges <= 4000000L) {
-      import scala.collection.mutable
-      val m = mEdges.toInt
-      val es = new Array[Int](m); val ed = new Array[Int](m)
-      val idx = new mutable.LongMap[Int](1 << 12)
-      val ids = mutable.ArrayBuilder.make[Long]
-      def idxOf(v: Long): Int = idx.getOrElseUpdate(v, { ids += v; idx.size })
-      val parts = edges.rdd.mapPartitions { it =>
-        val xs = mutable.ArrayBuilder.make[Long]
-        val xd = mutable.ArrayBuilder.make[Long]
-        it.foreach { r => xs += r.getLong(0); xd += r.getLong(1) }
-        Iterator((xs.result(), xd.result()))
-      }.collect()
-      var eid = 0
-      parts.foreach { case (xs, xd) =>
-        var p = 0
-        while (p < xs.length) {
-          es(eid) = idxOf(xs(p)); ed(eid) = idxOf(xd(p)); eid += 1; p += 1
-        }
-      }
-      require(eid == m, "label-prop collect raced a changing edge frame")
-      val allIds = ids.result()
-      val n = allIds.length
-      var lab = allIds.clone() // round 0: every node labels itself
-      for (_ <- 1 to 3) {
-        val cnts = Array.fill(n)(new mutable.LongMap[Long](8))
-        var i = 0
-        while (i < m) {
-          val c = cnts(es(i))
-          val l = lab(ed(i))
-          c.update(l, c.getOrElse(l, 0L) + 1L)
-          i += 1
-        }
-        val next = new Array[Long](n)
-        i = 0
-        while (i < n) {
-          var bestC = -1L; var bestL = 0L
-          cnts(i).foreach { case (l, c) =>
-            if (c > bestC || (c == bestC && l < bestL)) { bestC = c; bestL = l }
-          }
-          next(i) = bestL
-          i += 1
-        }
-        lab = next
-      }
-      val rows = new java.util.ArrayList[org.apache.spark.sql.Row](n)
-      var i = 0
-      while (i < n) {
-        rows.add(org.apache.spark.sql.Row(allIds(i), lab(i)))
-        i += 1
-      }
-      return s.createDataFrame(rows,
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("pk",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("label",
-            org.apache.spark.sql.types.LongType)))).orderBy(col("pk"))
-    }
-    var labels = edges.select(col("src").as("pk")).distinct()
-      .withColumn("label", col("pk"))
-    for (_ <- 1 to 3) {
-      // labels are node-sized: broadcast (a checkpointed table's default
-      // size stat would shuffle the edge list every round), and take the
-      // per-node winner as one map-side-combinable max-struct — (max c,
-      // then min label) is exactly the old window's (c desc, label asc)
-      val cnt = edges.join(broadcast(labels), edges("dst") === labels("pk"))
-        .groupBy(edges("src").as("pk2"), col("label"))
-        .agg(count(lit(1)).as("c"))
-      labels = cnt
-        .groupBy(col("pk2"))
-        .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("s"))
-        .select(col("pk2").as("pk"), (-col("s.nl")).as("label"))
-        .localCheckpoint(true)
-    }
-    labels.orderBy(col("pk"))
+    val edges = e0.union(e0.select(col("v"), col("u"))).toDF("src", "dst")
+    graft.operators.Graph.labelPropagation(edges, rounds = 3)
+      .select(col("node").as("pk"), col("label")).orderBy(col("pk"))
   }
 
   // three synchronous rounds unroll as three CTEs; mode + smallest-label

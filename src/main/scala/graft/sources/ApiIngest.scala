@@ -145,7 +145,8 @@ object ApiIngest {
     fetched.filter(col("status") === 200)
       .withColumn("__p", from_json(col("payload"), schema.add(corrupt, StringType),
         Map("columnNameOfCorruptRecord" -> corrupt)))
-      .filter(col("__p").isNotNull && col(s"__p.$corrupt").isNull)
+      .filter(col("__p").isNotNull && col(s"__p.$corrupt").isNull &&
+        graft.plans.JsonExpressions.jsonWhole(col("payload")))
       .select(col("request_id") +: schema.fieldNames.map(f => col(s"__p.$f")): _*)
   }
 

@@ -148,4 +148,18 @@ class ApiIngestSpec extends SparkSuite {
     // a missing field stays null; non-JSON, empty and mistyped bodies are out
     assert(rows == Seq((1L, "A", Some(1.5)), (5L, "C", None)))
   }
+
+  test("flatten excludes a 200 whose JSON value is followed by more text") {
+    val schema = StructType(Seq(StructField("name", StringType)))
+    val fetched = ApiIngest.fromFetchedBatches(spark, Seq(
+      FetchResult(1L, "u1", 200, """{"name":"E"} trailing"""),
+      FetchResult(2L, "u2", 200, """{"name":"F"}{"name":"G"}"""),
+      FetchResult(3L, "u3", 200, """{"name":"H"}]"""),
+      FetchResult(4L, "u4", 200, "{\"name\":\"I\"}  \n\t"),
+      FetchResult(5L, "u5", 200, """{"name":"J"}""")))
+    val rows = ApiIngest.flattenPayloads(fetched, schema)
+      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+    // trailing whitespace is still one whole value
+    assert(rows == Seq((4L, "I"), (5L, "J")))
+  }
 }

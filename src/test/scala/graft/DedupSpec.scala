@@ -59,8 +59,14 @@ class DedupSpec extends SparkSuite {
     // must finish (and hit the convergence check) within maxIter=10
     val nodes = (1L to 60L).toDF("id")
     val pairs = (1L until 60L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val out = Dedup.dupClusters(nodes, "id", pairs, maxIter = 10)
-      .as[(Long, Long)].collect().toMap
+    // 60 ids fit the driver union-find: force the propagation loop this
+    // test is about, and check that it is what ran
+    val (out, taken) = graft.operators.DriverFinisher.observe(
+        Some(graft.operators.DriverFinisher.Distributed)) {
+      Dedup.dupClusters(nodes, "id", pairs, maxIter = 10)
+        .as[(Long, Long)].collect().toMap
+    }
+    assert(taken == Seq("dupClusters" -> graft.operators.DriverFinisher.Distributed))
     assert((1L to 60L).forall(out(_) == 1L))
   }
 
@@ -136,7 +142,7 @@ class DedupSpec extends SparkSuite {
     def bag(df: org.apache.spark.sql.DataFrame) =
       df.as[(Long, Long)].collect().sorted.toSeq
     val driver = bag(Dedup.updateClustersDelta(comp, edges))
-    val dist = bag(Dedup.updateClustersDelta(comp, edges, driverMaxRows = 0L))
+    val dist = distributed(bag(Dedup.updateClustersDelta(comp, edges)))
     assert(driver == dist, s"driver=$driver dist=$dist")
     // node 2's root was already 1, so it must NOT re-emit; {20,21} untouched
     assert(driver.toMap == Map(5L -> 1L, 6L -> 1L, 30L -> 1L, 31L -> 1L,
@@ -147,7 +153,7 @@ class DedupSpec extends SparkSuite {
     def bagS(df: org.apache.spark.sql.DataFrame) =
       df.as[(String, String)].collect().sorted.toSeq
     val dS = bagS(Dedup.updateClustersDelta(compS, edgesS))
-    val xS = bagS(Dedup.updateClustersDelta(compS, edgesS, driverMaxRows = 0L))
+    val xS = distributed(bagS(Dedup.updateClustersDelta(compS, edgesS)))
     assert(dS == xS, s"driver=$dS dist=$xS")
     assert(dS.toMap == Map("x" -> "a", "m" -> "m", "z" -> "m"))
   }

@@ -308,8 +308,7 @@ class GraphSpec extends SparkSuite {
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     val viaDriver = canon(Graph.kTruss(edges, k = 4))
-    val viaRounds = canon(Graph.kTruss(edges, k = 4,
-      driverPeelMaxEdges = 0L))
+    val viaRounds = distributed(canon(Graph.kTruss(edges, k = 4)))
     assert(viaDriver.nonEmpty, "the test graph must keep a 4-truss")
     assert(viaDriver == viaRounds,
       s"paths disagree: ${viaDriver.size} vs ${viaRounds.size} edges")
@@ -427,10 +426,10 @@ class GraphSpec extends SparkSuite {
     assert(got == kruskal(edges), "unique MSF: Boruvka must equal Kruskal")
     assert(got.size == (29 + 19), "n-1 edges per island")
     // distinct weights: the distributed Boruvka rounds (forced past the
-    // driver-Kruskal guard) land the identical unique forest
-    val viaRounds = Graph.minimumSpanningForest(
-      edges.toDF("src", "dst", "w"), driverKruskalMaxEdges = 0L)
-      .as[(Long, Long, Long)].collect().toSet
+    // driver Kruskal) land the identical unique forest
+    val viaRounds = distributed(Graph.minimumSpanningForest(
+      edges.toDF("src", "dst", "w"))
+      .as[(Long, Long, Long)].collect().toSet)
     assert(viaRounds == got, "both paths produce the unique MSF")
   }
 
@@ -629,27 +628,20 @@ class GraphSpec extends SparkSuite {
     val srcs = Seq(1L).toDF("node")
     def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
       df.collect().map(_.toString).toSet
-    // driverMaxEdges = 0 forces the distributed loop; default takes the
-    // driver finisher — results must be identical (same rounding path)
-    assert(rows(Graph.pageRank(e, 4)) ===
-      rows(Graph.pageRank(e, 4, driverMaxEdges = 0L)))
-    assert(rows(Graph.eigenCentrality(sym, 4)) ===
-      rows(Graph.eigenCentrality(sym, 4, driverMaxEdges = 0L)))
-    assert(rows(Graph.personalizedPageRank(e, srcs, 4)) ===
-      rows(Graph.personalizedPageRank(e, srcs, 4, driverMaxEdges = 0L)))
-    assert(rows(Graph.katz(e, 4, 0.3)) ===
-      rows(Graph.katz(e, 4, 0.3, driverMaxEdges = 0L)))
-    assert(rows(Graph.bfsHops(e, srcs, 3)) ===
-      rows(Graph.bfsHops(e, srcs, 3, driverMaxEdges = 0L)))
-    assert(rows(Graph.multiSourceHarmonic(sym, srcs, 3)) ===
-      rows(Graph.multiSourceHarmonic(sym, srcs, 3, driverMaxEdges = 0L)))
+    // the default takes the driver finisher; the seam forces the
+    // distributed loop — results must be identical (same rounding path)
+    def same(run: => org.apache.spark.sql.DataFrame) =
+      assert(rows(run) === distributed(rows(run)))
+    same(Graph.pageRank(e, 4))
+    same(Graph.eigenCentrality(sym, 4))
+    same(Graph.personalizedPageRank(e, srcs, 4))
+    same(Graph.katz(e, 4, 0.3))
+    same(Graph.bfsHops(e, srcs, 3))
+    same(Graph.multiSourceHarmonic(sym, srcs, 3))
     val we = e.withColumn("w", $"dst" % 3 + 1)
-    assert(rows(Graph.shortestPaths(we, srcs, 4)) ===
-      rows(Graph.shortestPaths(we, srcs, 4, driverMaxEdges = 0L)))
-    assert(rows(Graph.kCore(sym, 2)) ===
-      rows(Graph.kCore(sym, 2, driverMaxEdges = 0L)))
-    val (h1, a1) = Graph.hits(e, "src", "dst", 3)
-    val (h0, a0) = Graph.hits(e, "src", "dst", 3, driverMaxEdges = 0L)
-    assert(rows(h1) === rows(h0) && rows(a1) === rows(a0))
+    same(Graph.shortestPaths(we, srcs, 4))
+    same(Graph.kCore(sym, 2))
+    same(Graph.hits(e, "src", "dst", 3)._1)
+    same(Graph.hits(e, "src", "dst", 3)._2)
   }
 }

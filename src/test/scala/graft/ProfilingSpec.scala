@@ -514,10 +514,10 @@ class ProfilingSpec extends SparkSuite {
       .head()
     assert(graft.operators.Drift.hlFromCensus(
       cen(half).unionByName(cen(rows.exceptAll(half)))).head() == hlOne)
-    // the distributed batched-probe selection (census above the driver
-    // guard) lands the identical statistic
-    assert(graft.operators.Drift.hlFromCensus(cen(rows),
-      driverSelectMaxCensus = 0L).head() == hlOne)
+    // the distributed batched-probe selection (forced past the driver
+    // search) lands the identical statistic
+    assert(distributed(graft.operators.Drift.hlFromCensus(cen(rows)).head()) ==
+      hlOne)
     val gv = ((1L to 9L).map(v => ("a", v)) ++ (4L to 15L).map(v => ("b", v)))
       .toDF("g", "v")
     val js = graft.operators.Drift.jamesStein(gv, "g", "v")

@@ -275,16 +275,16 @@ class SimilaritySpec extends SparkSuite {
 
 
   test("kmeansCentroids: driver-local Lloyd equals the distributed loop " +
-    "bit-for-bit (forced via driverMaxElems = 0)") {
+    "bit-for-bit (each branch forced through the seam)") {
+    import graft.operators.DriverFinisher.{Distributed, Driver}
     val emb = graft.sources.Tables.load(spark, sf, "embeddings").limit(120)
-    def cents(maxElems: Long) =
-      Similarity.kmeansCentroids(emb, "vec_id", "embedding", 8,
-          driverMaxElems = maxElems)
+    def cents() =
+      Similarity.kmeansCentroids(emb, "vec_id", "embedding", 8)
         .collect()
         .map(r => r.getInt(0) -> r.getSeq[Double](1))
         .toMap
-    val driver = cents(Long.MaxValue)
-    val distributed = cents(0L)
+    val driver = forced(Driver)(cents())
+    val distributed = forced(Distributed)(cents())
     assert(driver.keySet == distributed.keySet)
     driver.keySet.foreach { k =>
       assert(driver(k) == distributed(k), s"centroid mismatch at $k")
@@ -292,16 +292,16 @@ class SimilaritySpec extends SparkSuite {
   }
 
   test("pqTrain: driver-local Lloyd equals the distributed loop " +
-    "bit-for-bit (forced via driverMaxElems = 0)") {
+    "bit-for-bit (each branch forced through the seam)") {
+    import graft.operators.DriverFinisher.{Distributed, Driver}
     val emb = graft.sources.Tables.load(spark, sf, "embeddings").limit(120)
-    def cb(maxElems: Long) =
-      Similarity.pqTrain(emb, "vec_id", "embedding", 64, 4, 16,
-          driverMaxElems = maxElems)
+    def cb() =
+      Similarity.pqTrain(emb, "vec_id", "embedding", 64, 4, 16)
         .collect()
         .map(r => (r.getInt(0), r.getInt(1)) -> r.getSeq[Double](2))
         .toMap
-    val driver = cb(Long.MaxValue)
-    val distributed = cb(0L)
+    val driver = forced(Driver)(cb())
+    val distributed = forced(Distributed)(cb())
     assert(driver.keySet == distributed.keySet)
     driver.keySet.foreach { k =>
       assert(driver(k) == distributed(k), s"codebook mismatch at $k")

@@ -23,4 +23,12 @@ trait SparkSuite extends AnyFunSuite {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** `body` with every driver-finisher decision forced to `branch`. */
+  def forced[T](branch: graft.operators.DriverFinisher.Branch)(body: => T): T =
+    graft.operators.DriverFinisher.observe(Some(branch))(body)._1
+
+  /** `body` with every driver finisher forced to its distributed loop. */
+  def distributed[T](body: => T): T =
+    forced(graft.operators.DriverFinisher.Distributed)(body)
 }

@@ -359,7 +359,11 @@ class StreamingSpec extends SparkSuite {
           .start()
         try {
           val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
-          while (emitted.size < expectedEmissions &&
+          // stop only once the emitting batch has committed (its progress
+          // is posted after the commit-log write): a stop between the sink
+          // call and the commit makes the resumed run replay that file
+          def committed = q.recentProgress.exists(_.numInputRows > 0)
+          while ((emitted.size < expectedEmissions || !committed) &&
               System.nanoTime() < deadline) Thread.sleep(100L)
         } finally q.stop()
         q.awaitTermination()

@@ -887,12 +887,12 @@ class TrendSpec extends SparkSuite {
       ("b", 5L, 7L), ("b", 6L, 7L), ("b", 7L, 7L),
       ("d", 1L, 1L), ("d", 2L, 2L), ("d", 3L, 4L), ("d", 4L, 8L),
       ("c", 9L, 1L)).toDF("k", "x", "y")
-    def run(maxRows: Long) =
-      Trend.theilSenPerKey(df, "k", "x", "y", driverMaxRows = maxRows)
+    def run() =
+      Trend.theilSenPerKey(df, "k", "x", "y")
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    val driver = run(2000000L)
-    val dist = run(0L) // forces the distributed pair/window plan
+    val driver = forced(graft.operators.DriverFinisher.Driver)(run())
+    val dist = distributed(run()) // the distributed pair/window plan
     assert(driver == dist)
     // a: 5 distinct-x pairs (the x=3 duplicate pair never forms), lower
     // median of {-10, 5, 10, 15, 20} = 10; b: all-ties slope 0;
