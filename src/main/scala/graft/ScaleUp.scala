@@ -14,30 +14,42 @@ import org.apache.spark.sql.functions._
   * (custkey in customer+orders, orderkey in orders+lineitem, part/supp
   * keys in part/supplier+lineitem).
   *
-  * Usage: `runMain graft.ScaleUp <srcDir> <outDir> [factor=10]`; writes
-  * `<outDir>/<table>.parquet` directories matching the Tables.load
-  * contract (events `ts` lands as canonical epoch-nanos LONG — the form
-  * every operator consumes). Idempotent per table via _SUCCESS markers.
+  * Writes `<out>/<table>.parquet` directories that Tables.load reads
+  * like the source's (events `ts` lands as TIMESTAMP_NTZ, the test
+  * tables' physical form). Idempotent per table via _SUCCESS markers.
   */
 object ScaleUp {
-  def main(args: Array[String]): Unit = {
-    val src = args(0)
-    val out = args(1)
-    val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
-    val spark: SparkSession = GraftSession.local("graft-scaleup", cpus)
-    spark.sparkContext.setLogLevel("WARN")
-    stage(spark, src, out, factor)
-    spark.stop()
+
+  /** The directory of `src`'s `factor`× replica, `<root>/<name>_x<factor>`
+    * for a source directory named `<name>`, staged first where a table is
+    * missing. The replica's `source` file names the directory it was made
+    * from; a replica of another directory of the same name is refused
+    * rather than handed out in place of this one. */
+  def replica(spark: SparkSession, src: String, factor: Int,
+      root: String = "target"): String = {
+    import java.nio.file.{Files, Paths}
+    val source = Paths.get(src).toAbsolutePath.normalize.toString
+    val out = Paths.get(root, s"${Paths.get(source).getFileName}_x$factor")
+    val mark = out.resolve("source")
+    if (Files.exists(mark)) {
+      val from = Files.readString(mark)
+      require(from == source, s"$out is a replica of $from, not of $source; remove it to restage")
+    } else {
+      val stray = Files.exists(out) && {
+        val ls = Files.list(out)
+        try ls.findAny().isPresent finally ls.close()
+      }
+      require(!stray, s"$out holds files but no source mark; remove it to restage")
+      Files.createDirectories(out)
+      Files.writeString(mark, source)
+    }
+    stage(spark, src, out.toString, factor)
+    out.toString
   }
 
-  /** Stage `<out>/<table>.parquet` as a `factor`x replica of `src` —
-    * callable from an existing session (graft.Bench auto-stages the sf1
-    * directory with this before its sf1 section when the stage is
-    * missing, so the committed bench artifact always carries the
-    * above-sf0.1 evidence).
-    */
-  def stage(spark: SparkSession, src: String, out: String, factor: Int): Unit = {
+  /** Stage `<out>/<table>.parquet` as a `factor`x replica of `src`; a
+    * table whose _SUCCESS marker exists is left as it is. */
+  private def stage(spark: SparkSession, src: String, out: String, factor: Int): Unit = {
     require(factor >= 1)
     val reps = spark.range(factor).select(col("id").cast("long").as("__rep"))
 

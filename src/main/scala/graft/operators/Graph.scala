@@ -1055,7 +1055,7 @@ object Graph {
     val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
     // DRIVER-SIDE propagation when the edge list is collectable: each
     // round's winner is pure integer arithmetic — neighbor-label counts,
-    // max count then min label — identical to the max-struct below.
+    // max count then min label — identical to the min-struct below.
     if (DriverFinisher.fits("labelPropagation", DriverFinisher.SmallGraphEdges,
         longKeyed(e, "src", "dst"))(e.count())) {
       import scala.collection.mutable
@@ -1110,15 +1110,16 @@ object Graph {
     for (_ <- 1 to rounds) {
       // labels are node-sized: broadcast (a checkpointed table's default
       // size stat would shuffle the edge list every round), and take the
-      // per-node winner as one map-side-combinable max-struct — (max c,
+      // per-node winner as one map-side-combinable min-struct — (max c,
       // then min label) is exactly the oracle window's (c desc, label asc)
+      // for a label of any orderable type
       val cnt = e.join(broadcast(labels), e("dst") === labels("node"))
         .groupBy(e("src").as("n2"), col("label"))
         .agg(count(lit(1)).as("c"))
       labels = cnt
         .groupBy(col("n2"))
-        .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("s"))
-        .select(col("n2").as("node"), (-col("s.nl")).as("label"))
+        .agg(min(struct((-col("c")).as("nc"), col("label"))).as("s"))
+        .select(col("n2").as("node"), col("s.label").as("label"))
         .localCheckpoint(true)
     }
     labels

@@ -173,8 +173,10 @@ object Similarity {
     def literal(rows: Seq[(Int, Seq[Double])]): DataFrame =
       spark.createDataFrame(
         java.util.Arrays.asList(rows.map(r => Row(r._1, r._2)): _*), schema)
+    // init = the first k non-null vectors by id (the recompute below
+    // ignores a null vector too: its posexplode yields no rows)
     var cur: Seq[(Int, Seq[Double])] =
-      corpus.orderBy(col(idCol)).limit(k)
+      corpus.filter(col(vecCol).isNotNull).orderBy(col(idCol)).limit(k)
         .select(transform(col(vecCol), x => x.cast("double")).as("v"))
         .collect().toSeq.zipWithIndex
         .map { case (r, i) => (i, r.getSeq[Double](0)) }
@@ -612,9 +614,10 @@ object Similarity {
     def literal(rows: Seq[(Int, Int, Seq[Double])]): DataFrame =
       spark.createDataFrame(
         java.util.Arrays.asList(rows.map(r => Row(r._1, r._2, r._3)): _*), schema)
-    // init = first codebookSize vectors by id, sliced per subspace (the
-    // same rows each per-subspace init selected)
-    val initVecs = corpus.orderBy(col(idCol)).limit(codebookSize)
+    // init = first codebookSize non-null vectors by id, sliced per
+    // subspace (the same rows each per-subspace init selected)
+    val initVecs = corpus.filter(col(vecCol).isNotNull).orderBy(col(idCol))
+      .limit(codebookSize)
       .select(transform(col(vecCol), x => x.cast("double")).as("v"))
       .collect().toSeq.zipWithIndex
     var cur: Seq[(Int, Int, Seq[Double])] =

@@ -2,6 +2,7 @@ package graft
 package queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.GraftLakeBridge
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -197,24 +198,49 @@ private[queries] object Shared {
 
   /** The file-stream source requires a DIRECTORY to monitor; the testdata
     * keeps each table as a single parquet file. Stage a scratch directory
-    * holding a symlink to the events file (no data copy).
+    * holding a symlink to the events file (no data copy). An events table
+    * written by Spark (a `ScaleUp` replica) is a directory: the scratch
+    * directory then links each of its part files, since the source does
+    * not descend into a linked directory, and handing out the table's own
+    * directory would let a caller that stages extra files next to the
+    * links (q92's sentinel) write into the table. A missing events table
+    * fails as a batch read of it does (a dangling link would stream
+    * nothing and drain an empty answer).
     */
   def eventsPath(dir: String, name: String = "stream_events"): String = {
-    val staged = java.nio.file.Paths.get(scratch(dir, name))
-    val link = staged.resolve("events.parquet")
-    val target = java.nio.file.Paths.get(s"$dir/events.parquet")
-    java.nio.file.Files.createDirectories(staged)
-    // NOFOLLOW: a dangling or stale link must be detected as present and
-    // replaced — Files.exists(link) follows the link and would report false,
-    // after which createSymbolicLink throws FileAlreadyExistsException
-    val linkPresent = java.nio.file.Files.exists(
-      link, java.nio.file.LinkOption.NOFOLLOW_LINKS)
-    val stale = linkPresent &&
-      (!java.nio.file.Files.isSymbolicLink(link) ||
-        java.nio.file.Files.readSymbolicLink(link) != target)
-    if (stale) java.nio.file.Files.delete(link)
-    if (!linkPresent || stale)
-      java.nio.file.Files.createSymbolicLink(link, target)
+    import java.nio.file.{Files, LinkOption, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val target = Paths.get(s"$dir/events.parquet").toAbsolutePath
+    if (!Files.exists(target))
+      throw GraftLakeBridge.pathNotFound(new org.apache.hadoop.fs.Path(target.toString))
+    val wanted: Map[Path, Path] =
+      if (!Files.isDirectory(target)) Map(Paths.get("events.parquet") -> target)
+      else {
+        val parts = Files.list(target)
+        try parts.iterator().asScala.map(_.getFileName)
+          .filterNot(n => n.toString.startsWith("_") || n.toString.startsWith("."))
+          .map(n => n -> target.resolve(n)).toMap
+        finally parts.close()
+      }
+    val staged = Paths.get(scratch(dir, name))
+    Files.createDirectories(staged)
+    // drop links that no longer point where they should (a re-staged
+    // replica renames its parts); files staged next to them are kept
+    val listing = Files.list(staged)
+    val links = try listing.iterator().asScala.toList finally listing.close()
+    links.filter(Files.isSymbolicLink(_)).foreach { link =>
+      if (!wanted.get(link.getFileName).contains(Files.readSymbolicLink(link)))
+        Files.delete(link)
+    }
+    // NOFOLLOW: a dangling link must be detected as present — Files.exists
+    // follows the link and would report false
+    wanted.foreach { case (n, t) =>
+      val link = staged.resolve(n)
+      if (Files.exists(link, LinkOption.NOFOLLOW_LINKS) && !Files.isSymbolicLink(link))
+        Files.delete(link)
+      if (!Files.exists(link, LinkOption.NOFOLLOW_LINKS))
+        Files.createSymbolicLink(link, t)
+    }
     staged.toString
   }
 

@@ -1296,7 +1296,7 @@ private[queries] object TextQueries extends Family {
     * ([[graft.plans.ByteHistogram]], 256-long array per doc) finished in
     * array HOFs — no row per byte ever exists, where the explode
     * formulation pushed ~corpus-bytes intermediate rows through the scan
-    * stage (~10¹⁴ at 100 TB; ScaleProbe measures the gap). Entropy terms
+    * stage (~10¹⁴ at 100 TB; SURVEY.md §5 has the measured gap). Entropy terms
     * stay on the 1e-9 decimal grid summed exactly, so the hash matches
     * the hex-pair oracle bit-for-bit. The payload here is the document's
     * utf8 bytes — the plumbing carries to any binary column.

@@ -109,6 +109,16 @@ class DriverFinisherSpec extends SparkSuite {
     val srcs = Seq("a").toDF("node")
     parity(Set("pageRank"), Set(Distributed))(rows(Graph.pageRank(e, 2)))
     parity(Set("bfsHops"), Set(Distributed))(rows(Graph.bfsHops(e, srcs, 2)))
+    // round 1 breaks d's three-way tie to the smallest label; in round 2
+    // d's label count (d twice, a once) beats the smaller label
+    val sym = Seq(("b", "d"), ("c", "d"), ("a", "e"), ("e", "d"))
+      .flatMap(p => Seq(p, p.swap)).toDF("src", "dst")
+    assert(parity(Set("labelPropagation"), Set(Distributed))(
+      rows(Graph.labelPropagation(sym, 1))) ==
+      Seq("[a,e]", "[b,d]", "[c,d]", "[d,b]", "[e,a]"))
+    assert(parity(Set("labelPropagation"), Set(Distributed))(
+      rows(Graph.labelPropagation(sym, 2))) ==
+      Seq("[a,a]", "[b,b]", "[c,b]", "[d,d]", "[e,b]"))
   }
 
   test("minimumSpanningForest: Kruskal and Boruvka give the unique forest " +
@@ -176,8 +186,7 @@ class DriverFinisherSpec extends SparkSuite {
 
   /** Corpora of one vector width: ties, −0.0 and all-zero vectors (a NaN
     * cosine) in every corpus; NaN and null elements in some. The empty
-    * corpus is generated too. A null vector is outside both operators'
-    * input: their shared init reads the first vectors by id. */
+    * corpus is generated too. */
   private def genCorpus(dims: Int): Gen[Seq[(Long, Seq[java.lang.Double])]] = {
     val finite = Gen.oneOf(-1.0, -0.0, 0.0, 0.5, 1.0, 2.0)
     val any = Gen.frequency(12 -> finite, 1 -> Gen.const(Double.NaN))
@@ -211,6 +220,20 @@ class DriverFinisherSpec extends SparkSuite {
             lloydBranches(c))(rows(Similarity.kmeansCentroids(
           corpusDf(c), "id", "vec", k = 3, iters = 2, metric = metric)))
       }
+    }
+  }
+
+  test("kmeansCentroids and pqTrain initialise past a null vector") {
+    val c = Seq[Seq[java.lang.Double]](Seq(1.0, 0.0, 0.0, 2.0),
+      Seq(0.0, 1.0, 0.5, 0.0), Seq(1.0, 1.0, 0.0, -1.0), Seq(0.5, 2.0, 1.0, 1.0),
+      Seq(2.0, 0.0, 1.0, 0.5)).zipWithIndex.map { case (v, i) => (i + 1L, v) }
+    val withNull = corpusDf((0L, null) +: c)
+    Seq(Driver, Distributed).foreach { b =>
+      def both(df: DataFrame) = forced(b)((
+        rows(Similarity.kmeansCentroids(df, "id", "vec", k = 3, iters = 2)),
+        rows(Similarity.pqTrain(df, "id", "vec", dims = 4, subspaces = 2,
+          codebookSize = 3))))
+      assert(both(withNull) == both(corpusDf(c)), s"forced $b")
     }
   }
 

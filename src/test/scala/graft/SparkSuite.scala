@@ -5,14 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared single session for all suites (one JVM under Test/fork). */
 object SparkSuite {
-  lazy val session: SparkSession = SparkSession.builder()
+  lazy val session: SparkSession = GraftSession.builder("graft-test", 4)
     .master("local[4]")
-    .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .withExtensions(new graft.plans.GraftExtensions)
     .getOrCreate()
 }
 
