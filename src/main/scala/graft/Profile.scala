@@ -10,7 +10,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.json.JsonMapper
 import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.GraftListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, StageInfo}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.streaming.StreamingQueryListener
@@ -22,7 +22,9 @@ import graft.operators.DriverFinisher
   * - `wall_s`, `SparkEntry.build_s` (the builder call), `operators.jobs`
   *   and `operators.driver_gap_s` (wall time outside every Spark job),
   *   one sample per measured run;
-  * - `jobs`: each job's id, seconds and call site;
+  * - `jobs`: each job's id, seconds and call site (for a job adaptive
+  *   execution submits, its result stage's operators, e.g. `Exchange,
+  *   WholeStageCodegen (2) at CompletableFuture.java:1768`);
   * - `streaming.batches`: each micro-batch's `durationMs` phases;
   * - `finishers`: the branch each driver finisher took;
   * - `plan`: the final formatted physical plan;
@@ -172,8 +174,19 @@ object Profile {
     // a job's call site is the name of its result stage, the stage it
     // created last
     override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      started(e.jobId) = (e.time, e.stageInfos.maxByOption(_.stageId).fold("")(_.name))
+      started(e.jobId) = (e.time, e.stageInfos.maxByOption(_.stageId).fold("")(site))
     }
+
+    /** A stage's call site; a stage that adaptive execution submits from
+      * its own thread pool names only that pool's frame there, so it is
+      * named by its operators, the scopes of its RDDs, instead. */
+    private def site(stage: StageInfo): String =
+      if (!stage.name.contains("withThreadLocalCaptured")) stage.name
+      else {
+        val ops = stage.rddInfos.sortBy(_.id).flatMap(GraftListenerBridge.scope).map(_.trim).distinct
+        val at = stage.name.lastIndexOf(" at ")
+        if (ops.isEmpty || at < 0) stage.name else ops.mkString(", ") + stage.name.substring(at)
+      }
 
     override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
       started.remove(e.jobId).foreach { case (t, site) =>

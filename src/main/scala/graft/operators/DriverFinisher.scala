@@ -1,9 +1,17 @@
 package graft.operators
 
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicReference}
+
 import scala.collection.mutable
+import scala.concurrent.Await
+import scala.concurrent.duration.Duration
 import scala.util.DynamicVariable
 
+import org.apache.spark.FutureAction
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.types.LongType
 
 /** Driver finishers: the one place that decides whether a guarded
@@ -21,8 +29,8 @@ import org.apache.spark.sql.types.LongType
   *  - '''Budget''': an eligible input finishes on the driver when its size
   *    is at most the operator's budget below. The size is computed only
   *    when it decides something, by the same Spark job the operator needs
-  *    anyway (the count of a checkpointed frame, or the bounded
-  *    `limit(budget + 1).collect` of [[collectWithin]]).
+  *    anyway (the count of a checkpointed frame, or the one bounded
+  *    collect of [[collectWithin]] and [[partitionsWithin]]).
   *  - '''The distributed loop is never removed''': it is the only path for
   *    input above the budget.
   *  - '''Both branches are parity-tested''': tests force each branch with
@@ -56,6 +64,10 @@ object DriverFinisher {
   val HlCensus = 2000000L
   /** Preference-spine rows for stableMatch. */
   val MatchRows = 4000000L
+  /** UnsafeRow bytes of a frame that lakeWrite (PartitionedLake's writes)
+    * and jdbcLoad (JdbcSink.load) write from the driver, skipping Spark's
+    * write job. */
+  val SmallWriteBytes = 2L << 20
 
   private final class Scope(val force: Option[Branch]) {
     val taken = mutable.ArrayBuffer.empty[(String, Branch)]
@@ -98,22 +110,75 @@ object DriverFinisher {
     decide(op, eligible)(true)
 
   /** The guard that collects: the rows of every frame when each has at
-    * most `budget` rows (one bounded `limit(budget + 1)` job per frame,
-    * stopping at the first frame over it), else None. */
+    * most `budget` rows (one bounded job per frame, stopping at the first
+    * frame over it), else None. */
   def collectWithin(op: String, budget: Long, eligible: Boolean = true)(
-      frames: DataFrame*): Option[Seq[Array[Row]]] = {
-    val lim = math.min(budget + 1, Int.MaxValue.toLong - 1).toInt
-    val got = mutable.ArrayBuffer.empty[Array[Row]]
+      frames: DataFrame*): Option[Seq[Array[Row]]] =
+    gather(op, budget, eligible, _ => 1L)(frames).map(_.zip(frames).map { case (parts, f) =>
+      val toRow = ExpressionEncoder(f.schema).resolveAndBind().createDeserializer()
+      parts.flatMap(_.map(toRow))
+    })
+
+  /** The guard that collects a frame to write it from the driver: its
+    * rows, by input partition, when their UnsafeRow bytes total at most
+    * `budget` (one bounded job), else None. */
+  def partitionsWithin(op: String, budget: Long, eligible: Boolean = true)(
+      df: DataFrame): Option[Array[Array[UnsafeRow]]] =
+    gather(op, budget, eligible, _.getSizeInBytes.toLong)(Seq(df)).map(_.head)
+
+  private def gather(op: String, budget: Long, eligible: Boolean, weight: UnsafeRow => Long)(
+      frames: Seq[DataFrame]): Option[Seq[Array[Array[UnsafeRow]]]] = {
+    val got = mutable.ArrayBuffer.empty[Array[Array[UnsafeRow]]]
     val driver = decide(op, eligible) {
       frames.forall { f =>
-        val rows = f.limit(lim).collect()
-        got += rows
-        rows.length <= budget
+        val parts = bounded(f, budget, weight)
+        got ++= parts
+        parts.isDefined
       }
     }
     if (!driver) None
     else if (got.length == frames.length) Some(got.toSeq)
-    else Some(frames.map(_.collect())) // forced: no bounded probe ran
+    else Some(frames.map(bounded(_, Long.MaxValue, weight).get)) // forced: no bounded probe ran
+  }
+
+  /** The rows of `df`, by input partition, when their total `weight` is at
+    * most `budget`, else None. One job and no `limit` scale-up jobs: each
+    * task copies its rows until its own weight passes the budget, and the
+    * driver cancels the job once the total does. */
+  private def bounded(df: DataFrame, budget: Long, weight: UnsafeRow => Long)
+      : Option[Array[Array[UnsafeRow]]] = {
+    val rdd = df.queryExecution.toRdd
+    val schema = df.queryExecution.executedPlan.schema
+    val parts = new Array[Array[UnsafeRow]](rdd.getNumPartitions)
+    var total = 0L
+    val over = new AtomicBoolean(false)
+    val job = new AtomicReference[FutureAction[Unit]]()
+    def cancel(): Unit = Option(job.get).foreach(_.cancel())
+    val take = (it: Iterator[InternalRow]) => {
+      lazy val toUnsafe = UnsafeProjection.create(schema)
+      val out = mutable.ArrayBuilder.make[UnsafeRow]
+      var w = 0L
+      while (w <= budget && it.hasNext) {
+        val r = it.next() match {
+          case u: UnsafeRow => u.copy()
+          case g => toUnsafe(g).copy()
+        }
+        w += weight(r)
+        out += r
+      }
+      (out.result(), w)
+    }
+    // the handler runs one task result at a time
+    job.set(df.sparkSession.sparkContext.submitJob(rdd, take, parts.indices,
+      (i: Int, res: (Array[UnsafeRow], Long)) => {
+        parts(i) = res._1
+        total += res._2
+        if (total > budget && !over.getAndSet(true)) cancel()
+      }, ()))
+    if (over.get) cancel()
+    Await.ready(job.get, Duration.Inf)
+    if (over.get) None
+    else { job.get.value.get.get; Some(parts) }
   }
 
   /** Collect every column of an all-long, null-free frame onto the

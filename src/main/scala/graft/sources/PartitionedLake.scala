@@ -4,6 +4,9 @@ import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{GraftLakeBridge, HadoopFsRelation, LogicalRelationWithTable}
+import org.apache.spark.sql.internal.SQLConf.PartitionOverwriteMode
+
+import graft.operators.DriverFinisher
 
 /** Partitioned parquet lake with the reference's delete-then-insert refresh.
   *
@@ -12,10 +15,17 @@ import org.apache.spark.sql.execution.datasources.{GraftLakeBridge, HadoopFsRela
   * `duck_db_parquet_delete_and_insert`, `delete_partition_data`). Spark-first,
   * that pattern IS dynamic partition overwrite: `mode=overwrite` +
   * `partitionOverwriteMode=dynamic` replaces exactly the partitions present in
-  * the incoming DataFrame and leaves every other partition untouched — one
-  * atomic job commit instead of hand-rolled list/delete/copy, and it scales to
-  * thousands of partitions because the commit protocol only touches the
-  * partitions being written.
+  * the incoming DataFrame and leaves every other partition untouched. Files
+  * are staged under `<path>/.spark-staging-<uuid>` and each written partition
+  * directory is swapped in by a rename at commit, and the commit touches only
+  * the partitions being written, so it scales to thousands of partitions.
+  *
+  * Every write is a driver finisher (op `lakeWrite`,
+  * [[graft.operators.DriverFinisher.SmallWriteBytes]]): a frame whose rows
+  * fit the budget is collected by one bounded job and written and committed
+  * from the driver ([[DriverLakeWrite]]), leaving the files, directories and
+  * footers Spark's writer leaves; a larger frame runs Spark's writer. The
+  * reference writes a day's few hundred rows from its one process too.
   */
 object PartitionedLake {
 
@@ -35,14 +45,33 @@ object PartitionedLake {
     * reads `path`, or a directory under it, is rejected with Spark's
     * `UNSUPPORTED_OVERWRITE.PATH` error before anything is deleted.
     * Materialize such a frame first (`localCheckpoint`), as [[compact]]
-    * does. */
+    * does.
+    *
+    * A frame within [[graft.operators.DriverFinisher.SmallWriteBytes]] is
+    * written from the driver: `path` is cleared and the staged partitions
+    * renamed into it, then `_SUCCESS` is written, as Spark's static
+    * overwrite leaves it. The session's `partitionOverwriteMode` applies on
+    * either branch. */
   def writeAll(df: DataFrame, path: String, partCols: Seq[String]): Unit = {
     verifyNotReadPath(df, path)
-    df.write
-      .mode("overwrite")
-      .partitionBy(partCols: _*)
-      .parquet(path)
+    write(df, path, partCols, dynamic =
+      df.sparkSession.sessionState.conf.partitionOverwriteMode == PartitionOverwriteMode.DYNAMIC)
   }
+
+  /** Overwrites `path` with `df`, replacing only the partitions `df` holds
+    * when `dynamic`: from the driver when `df` fits the `lakeWrite` budget,
+    * else by Spark's writer. */
+  private def write(df: DataFrame, path: String, partCols: Seq[String], dynamic: Boolean): Unit =
+    DriverFinisher.partitionsWithin("lakeWrite", DriverFinisher.SmallWriteBytes,
+      DriverLakeWrite.eligible(df, partCols))(df) match {
+      case Some(parts) => DriverLakeWrite(df, parts, path, partCols, dynamic)
+      case None =>
+        df.write
+          .mode("overwrite")
+          .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
+          .partitionBy(partCols: _*)
+          .parquet(path)
+    }
 
   /** Throws when `df`'s plan scans `path` or a path under it. Spark's own
     * check (`DDLUtils.verifyNotReadPath`) only catches a scan of `path`
@@ -59,13 +88,15 @@ object PartitionedLake {
 
   /** Idempotent per-partition refresh: replaces only the partitions present
     * in `df` (the reference's delete-insert), leaving the rest intact.
+    *
+    * A frame within [[graft.operators.DriverFinisher.SmallWriteBytes]] is
+    * collected before anything is deleted, then written from the driver:
+    * each written partition's directory is deleted and its staged
+    * directory renamed into place, as Spark's dynamic overwrite commits.
+    * The file-count contract of [[writeAll]] holds on either branch.
     */
   def deleteInsert(df: DataFrame, path: String, partCols: Seq[String]): Unit =
-    df.write
-      .mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCols: _*)
-      .parquet(path)
+    write(df, path, partCols, dynamic = true)
 
   /** Partition-pruned read: the relation `spark.read.parquet(path)` would
     * give (same schema, inferred partition types, rows and files), whose

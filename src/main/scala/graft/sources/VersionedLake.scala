@@ -26,15 +26,10 @@ object VersionedLake {
 
   /** Append one change set as `version=v`. Versions must be written with
     * distinct, increasing ids; re-writing an id replaces that change set
-    * (idempotent backfill).
+    * (idempotent backfill), through [[PartitionedLake.deleteInsert]].
     */
   def writeVersion(changes: DataFrame, path: String, version: Long): Unit =
-    changes
-      .withColumn("version", lit(version))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("version")
-      .parquet(path)
+    PartitionedLake.deleteInsert(changes.withColumn("version", lit(version)), path, Seq("version"))
 
   /** Checkpoint the change chain: materialize the reconstruction as of
     * `version` into a fresh base change set at `newVersion` (`op = U` for

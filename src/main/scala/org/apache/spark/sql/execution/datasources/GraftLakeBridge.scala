@@ -1,6 +1,6 @@
 package org.apache.spark.sql.execution.datasources
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.StructType
   * resolution that `graft.sources.LakeFileIndex` reuses, so a lake read
   * infers exactly what `spark.read.parquet` infers and fails with the same
   * errors; `graft.sources.PartitionedLake` raises Spark's own overwrite
-  * error through it too.
+  * error and re-caches after a driver-side write through it too.
   */
 object GraftLakeBridge {
 
@@ -59,6 +59,13 @@ object GraftLakeBridge {
   def pathNotFound(path: Path): Throwable = QueryCompilationErrors.dataPathNotExistError(path.toString)
 
   def unableToInferSchema(): Throwable = QueryCompilationErrors.dataSchemaNotSpecifiedError("Parquet")
+
+  /** What Spark's file writer does after its commit: re-caches every
+    * cached plan that reads under `path`. */
+  def recacheByPath(spark: SparkSession, path: Path, fs: FileSystem): Unit = {
+    val session = org.apache.spark.sql.classic.ClassicConversions.castToImpl(spark)
+    session.sharedState.cacheManager.recacheByPath(session, path, fs)
+  }
 
   def cannotOverwritePathBeingRead(path: Path): Throwable =
     QueryCompilationErrors.cannotOverwritePathBeingReadFromError(path.toString)

@@ -1,6 +1,11 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Test}
 import org.scalacheck.rng.Seed
@@ -8,6 +13,7 @@ import org.scalacheck.rng.Seed
 import graft.operators.{Dedup, Drift, DriverFinisher, Graph, Learn, Sharding,
   Similarity, Trend}
 import graft.operators.DriverFinisher.{Branch, Distributed, Driver}
+import graft.sources.{JdbcSink, PartitionedLake}
 
 /** Parity of every driver finisher: each property runs an operator with
   * the seam forced to [[Driver]] and to [[Distributed]] over generated
@@ -334,5 +340,139 @@ class DriverFinisherSpec extends SparkSuite {
       }
       assert(taken == Seq("pageRank" -> Distributed))
     } finally pool.shutdown()
+  }
+
+  /** Everything a lake write leaves under `dir`: the tree of paths with
+    * each write job's uuid masked, the footer schema and key-value
+    * metadata of every parquet file by directory, and the rows
+    * `spark.read.parquet` gives. */
+  private def lakeState(dir: String): (Seq[String], Seq[String], Seq[String]) = {
+    val root = Paths.get(dir)
+    val walk = Files.walk(root)
+    val paths = try walk.iterator().asScala.toList finally walk.close()
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}".r
+    val tree = paths.map(p => uuid.replaceAllIn(root.relativize(p).toString, "U")).sorted
+    assert(!tree.exists(_.contains(".spark-staging")), s"staging left in $tree")
+    val files = paths.filter(p => p.getFileName.toString.endsWith(".parquet"))
+    val footers = files.map { p =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(p.toString), spark.sparkContext.hadoopConfiguration))
+      val meta = try r.getFooter.getFileMetaData finally r.close()
+      s"${root.relativize(p.getParent)} ${meta.getSchema} " +
+        meta.getKeyValueMetaData.asScala.toSeq.sorted.mkString(",")
+    }.sorted
+    (tree, footers, if (files.isEmpty) Nil else rows(spark.read.parquet(dir)))
+  }
+
+  private def lake(seed: DataFrame, partCols: Seq[String])(
+      write: String => Unit): (Seq[String], Seq[String], Seq[String]) = {
+    val dir = Files.createTempDirectory("graft_finisher_lake").toString + "/t"
+    distributed(PartitionedLake.writeAll(seed, dir, partCols))
+    write(dir)
+    lakeState(dir)
+  }
+
+  test("lakeWrite: writeAll, deleteInsert, compact and mergeUpsert leave the " +
+    "same rows, directories, files and footers under both branches") {
+    import spark.implicits._
+    val days = Seq(("2024-01-01", "a", 1, 1.5), ("2024-01-02", "b", 2, -0.5),
+      ("2024-01-02", "c", 3, 0.0), ("2024-01-03", "a:b c", 4, 2.0))
+      .toDF("day", "s", "n", "x")
+    val typed = days.select(col("day").cast("date").as("date_id"), col("s"), col("n"),
+      col("day").cast("timestamp").as("ts"), col("x"))
+    // string values: escaped, null and empty (both land in the default partition)
+    val strings = Seq[(String, java.lang.Long)](("a:b c", 1L), ("x/y=z", 2L), (null, 3L),
+      ("", 4L), ("plain", null)).toDF("s", "v")
+    val lakeWrite = Set("lakeWrite")
+    // date, string, int and timestamp partition columns, one and two levels
+    Seq(Seq("date_id"), Seq("s"), Seq("n"), Seq("ts"), Seq("date_id", "s")).foreach { parts =>
+      parity(lakeWrite)(lake(typed, parts)(PartitionedLake.writeAll(typed.repartition(3), _, parts)))
+      parity(lakeWrite)(lake(typed, parts)(dir =>
+        PartitionedLake.deleteInsert(typed.filter(col("n") > 1).withColumn("x", col("x") * 10), dir, parts)))
+    }
+    parity(lakeWrite)(lake(strings, Seq("s"))(PartitionedLake.writeAll(strings.coalesce(2), _, Seq("s"))))
+    parity(lakeWrite)(lake(strings, Seq("s"))(PartitionedLake.deleteInsert(
+      strings.filter(col("v").isNotNull).withColumn("v", col("v") + 1), _, Seq("s"))))
+    // empty frames
+    parity(lakeWrite)(lake(typed, Seq("date_id"))(PartitionedLake.writeAll(typed.limit(0), _, Seq("date_id"))))
+    parity(lakeWrite)(lake(typed, Seq("date_id"))(PartitionedLake.deleteInsert(typed.limit(0), _, Seq("date_id"))))
+    // a refresh computed from the lake it replaces
+    parity(lakeWrite)(lake(typed, Seq("date_id"))(dir => PartitionedLake.deleteInsert(
+      PartitionedLake.read(spark, dir).filter(col("n") >= 3).withColumn("n", col("n") + 100),
+      dir, Seq("date_id"))))
+    // compact and mergeUpsert write through deleteInsert
+    val many = spark.range(60).selectExpr("id", "CAST(id % 3 AS INT) AS p", "id * 0.5 AS x").repartition(4)
+    parity(lakeWrite)(lake(many, Seq("p"))(dir =>
+      PartitionedLake.compact(spark, dir, "p", Seq("0", "2"), filesPerPartition = 2)))
+    parity(lakeWrite)(lake(typed, Seq("date_id"))(dir => PartitionedLake.mergeUpsert(spark, dir,
+      typed.filter(col("n") =!= 1).withColumn("x", lit(9.0)).unionByName(typed.filter(col("n") === 4)
+        .withColumn("s", lit("new"))), Seq("date_id", "s"), Seq("date_id"))))
+  }
+
+  test("lakeWrite: a frame cached over the lake sees the rows either branch wrote") {
+    import spark.implicits._
+    Seq(Driver, Distributed).foreach { b =>
+      val dir = Files.createTempDirectory("graft_finisher_cache").toString
+      PartitionedLake.writeAll(Seq(("2024-01-01", 1L), ("2024-01-02", 2L)).toDF("date_id", "v"),
+        dir, Seq("date_id"))
+      val cached = PartitionedLake.read(spark, dir).cache()
+      try {
+        assert(cached.count() == 2)
+        val (_, taken) = DriverFinisher.observe(Some(b))(PartitionedLake.deleteInsert(
+          Seq(("2024-01-02", 20L), ("2024-01-02", 21L), ("2024-01-03", 3L)).toDF("date_id", "v"),
+          dir, Seq("date_id")))
+        assert(taken == Seq("lakeWrite" -> b))
+        assert(rows(cached.select(col("date_id").cast("string"), col("v"))) ==
+          Seq("[2024-01-01,1]", "[2024-01-02,20]", "[2024-01-02,21]", "[2024-01-03,3]"), s"forced $b")
+      } finally cached.unpersist()
+    }
+  }
+
+  test("jdbcLoad: the keyed delete and insert leave the same table under both branches") {
+    val schema = StructType(Seq(StructField("date_id", StringType), StructField("city", StringType),
+      StructField("n", IntegerType), StructField("big", LongType), StructField("temp", DoubleType),
+      StructField("ok", BooleanType), StructField("amount", DecimalType(10, 2)),
+      StructField("day", DateType), StructField("at", TimestampType)))
+    def frame(rs: Row*) = spark.createDataFrame(java.util.Arrays.asList(rs: _*), schema)
+    val d = java.sql.Date.valueOf("2024-01-05")
+    val t = java.sql.Timestamp.valueOf("2024-01-05 06:07:08.123456")
+    val seed = frame(Row("2024-01-01", "old", 1, 10L, 1.0, true, BigDecimal("1.25").bigDecimal, d, t),
+      Row("2024-01-02", "keep", 2, 20L, -0.0, false, null, null, null))
+    val refresh = frame(Row("2024-01-01", "new", 3, null, 9.5, null, BigDecimal("-3.10").bigDecimal, d, t),
+      Row("2024-01-01", null, null, 40L, null, true, null, null, t)).repartition(2)
+    var db = 0
+    /** A fresh database seeded with `seed`, then each load in turn (each
+      * step builds its frame from the database's url); the table after. */
+    def load(steps: (String => DataFrame, String)*): Seq[String] = {
+      db += 1
+      val url = s"jdbc:derby:memory:graft_finisher_$db;create=true"
+      val props = new java.util.Properties()
+      seed.write.mode("overwrite")
+        .option("createTableColumnTypes", "date_id VARCHAR(10), city VARCHAR(8)")
+        .jdbc(url, "gold.t", props)
+      steps.foreach { case (df, key) =>
+        JdbcSink.load(df(url), url, "gold", "t", "date_id", key, props, numPartitions = 1)
+      }
+      val c = java.sql.DriverManager.getConnection(url, props)
+      try {
+        val rs = c.createStatement().executeQuery("SELECT * FROM gold.t")
+        val out = Iterator.continually(rs.next()).takeWhile(identity).map(_ =>
+          (1 to schema.size).map(i => String.valueOf(rs.getObject(i))).mkString("|")).toList
+        val stages = c.createStatement().executeQuery(
+          "SELECT COUNT(*) FROM SYS.SYSTABLES WHERE UPPER(TABLENAME) LIKE '%STAGE%'")
+        stages.next()
+        assert(stages.getInt(1) == 0)
+        out.sorted
+      } finally c.close()
+    }
+    val jdbcLoad = Set("jdbcLoad")
+    parity(jdbcLoad)(load((_ => refresh, "2024-01-01")))
+    // a key with no rows yet, then an empty refresh that clears a key
+    parity(jdbcLoad)(load((_ => refresh, "2024-01-03"), (_ => refresh.limit(0), "2024-01-02")))
+    // a refresh read from the table it replaces
+    parity(jdbcLoad)(load((_ => refresh, "2024-01-01"), (url =>
+      spark.read.jdbc(url, "gold.t", new java.util.Properties())
+        .filter(col("date_id") === "2024-01-01").withColumn("n", lit(7)), "2024-01-01")))
   }
 }

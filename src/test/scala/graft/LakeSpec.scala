@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelationWithTable}
 import org.apache.spark.sql.functions._
 
+import graft.operators.DriverFinisher.{Distributed, Driver}
 import graft.sources.{ApiIngest, FetchResult, JdbcSink, PartitionedLake}
 
 class LakeSpec extends SparkSuite {
@@ -368,100 +369,106 @@ class LakeSpec extends SparkSuite {
   }
 
   test("jdbc load that fails rethrows its error, keeps the target rows and drops the stage") {
-    val url = "jdbc:derby:memory:graftdb_fail;create=true"
-    val props = new java.util.Properties()
-    val seed = Seq(("2024-01-01", "old", 1.0), ("2024-01-02", "keep", 3.0))
-      .toDF("date_id", "city", "temp")
-    seed.write.mode("overwrite")
-      .option("createTableColumnTypes", "date_id VARCHAR(10), city VARCHAR(5)")
-      .jdbc(url, "dashboard.weather", props)
-    def target = spark.read.jdbc(url, "dashboard.weather", props)
-      .select("date_id", "city", "temp").as[(String, String, Double)].collect().toSet
-    def stages = {
-      val c = java.sql.DriverManager.getConnection(url, props)
-      try {
-        val r = c.createStatement().executeQuery(
-          "SELECT COUNT(*) FROM SYS.SYSTABLES WHERE UPPER(TABLENAME) LIKE '%STAGE%'")
-        r.next(); r.getInt(1)
-      } finally c.close()
-    }
-    // the insert from the stage fails after the keyed delete: a city longer
-    // than the target column
-    val tooLong = Seq(("2024-01-01", "much_too_long", 9.0)).toDF("date_id", "city", "temp")
-    intercept[java.sql.SQLException] {
-      JdbcSink.load(tooLong, url, "dashboard", "weather", "date_id", "2024-01-01", props, numPartitions = 1)
-    }
-    assert(target == seed.as[(String, String, Double)].collect().toSet)
-    assert(stages == 0)
-    // the distributed staging load itself fails
-    val broken = Seq(("2024-01-01", "new", 9.0)).toDF("date_id", "city", "temp")
-      .withColumn("temp", when(col("temp") > 0, raise_error(lit("stage load failed"))).otherwise(col("temp")))
-    val e = intercept[Exception] {
-      JdbcSink.load(broken, url, "dashboard", "weather", "date_id", "2024-01-01", props, numPartitions = 1)
-    }
-    assert(e.toString.contains("stage load failed") || Option(e.getCause).exists(_.toString.contains("stage load failed")))
-    assert(target == seed.as[(String, String, Double)].collect().toSet)
-    assert(stages == 0)
+    Seq(Driver, Distributed).foreach { branch => forced(branch) {
+      val url = s"jdbc:derby:memory:graftdb_fail_$branch;create=true"
+      val props = new java.util.Properties()
+      val seed = Seq(("2024-01-01", "old", 1.0), ("2024-01-02", "keep", 3.0))
+        .toDF("date_id", "city", "temp")
+      seed.write.mode("overwrite")
+        .option("createTableColumnTypes", "date_id VARCHAR(10), city VARCHAR(5)")
+        .jdbc(url, "dashboard.weather", props)
+      def target = spark.read.jdbc(url, "dashboard.weather", props)
+        .select("date_id", "city", "temp").as[(String, String, Double)].collect().toSet
+      def stages = {
+        val c = java.sql.DriverManager.getConnection(url, props)
+        try {
+          val r = c.createStatement().executeQuery(
+            "SELECT COUNT(*) FROM SYS.SYSTABLES WHERE UPPER(TABLENAME) LIKE '%STAGE%'")
+          r.next(); r.getInt(1)
+        } finally c.close()
+      }
+      // the insert fails after the keyed delete: a city longer than the
+      // target column
+      val tooLong = Seq(("2024-01-01", "much_too_long", 9.0)).toDF("date_id", "city", "temp")
+      intercept[java.sql.SQLException] {
+        JdbcSink.load(tooLong, url, "dashboard", "weather", "date_id", "2024-01-01", props, numPartitions = 1)
+      }
+      assert(target == seed.as[(String, String, Double)].collect().toSet)
+      assert(stages == 0)
+      // computing the frame fails, before the delete
+      val broken = Seq(("2024-01-01", "new", 9.0)).toDF("date_id", "city", "temp")
+        .withColumn("temp", when(col("temp") > 0, raise_error(lit("stage load failed"))).otherwise(col("temp")))
+      val e = intercept[Exception] {
+        JdbcSink.load(broken, url, "dashboard", "weather", "date_id", "2024-01-01", props, numPartitions = 1)
+      }
+      assert(e.toString.contains("stage load failed") || Option(e.getCause).exists(_.toString.contains("stage load failed")))
+      assert(target == seed.as[(String, String, Double)].collect().toSet)
+      assert(stages == 0)
+    } }
   }
 
   test("writeAll rejects a plan that reads its own output and keeps the lake") {
-    val dir = Files.createTempDirectory("graft_lake_self").toString
-    PartitionedLake.writeAll(Seq(("2024-01-01", 1L), ("2024-01-02", 2L)).toDF("date_id", "v"),
-      dir, Seq("date_id"))
-    def files: Map[String, Seq[Byte]] = {
-      val walk = Files.walk(Paths.get(dir))
-      try walk.iterator().asScala.filter(Files.isRegularFile(_))
-        .map(f => Paths.get(dir).relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
-      finally walk.close()
-    }
-    val before = files
-    Seq(
-      PartitionedLake.read(spark, dir).filter(col("date_id") === "2024-01-01"),
-      spark.read.parquet(dir).filter(col("v") > 0),
-      spark.read.parquet(s"$dir/date_id=2024-01-02").withColumn("date_id", lit("2024-01-03")),
-      Seq("2024-01-01").toDF("date_id")
-        .join(PartitionedLake.read(spark, dir), Seq("date_id"), "left_semi")
-        .withColumn("v", lit(0L))
-    ).foreach { df =>
-      val e = intercept[AnalysisException](PartitionedLake.writeAll(df, dir, Seq("date_id")))
-      assert(e.getCondition == "UNSUPPORTED_OVERWRITE.PATH")
-      assert(files == before)
-    }
-    // a sibling whose name extends the lake's is not under it
-    val sibling = dir + "_copy"
-    PartitionedLake.writeAll(spark.read.parquet(dir), sibling, Seq("date_id"))
-    PartitionedLake.writeAll(spark.read.parquet(sibling).filter(col("v") > 1), dir, Seq("date_id"))
-    assert(PartitionedLake.read(spark, dir).select("v").as[Long].collect().toSeq == Seq(2L))
-    // a materialized frame no longer reads the lake
-    PartitionedLake.writeAll(PartitionedLake.read(spark, dir).withColumn("v", col("v") * 10)
-      .localCheckpoint(true), dir, Seq("date_id"))
-    assert(PartitionedLake.read(spark, dir).select("v").as[Long].collect().toSeq == Seq(20L))
+    Seq(Driver, Distributed).foreach { branch => forced(branch) {
+      val dir = Files.createTempDirectory("graft_lake_self").toString
+      PartitionedLake.writeAll(Seq(("2024-01-01", 1L), ("2024-01-02", 2L)).toDF("date_id", "v"),
+        dir, Seq("date_id"))
+      def files: Map[String, Seq[Byte]] = {
+        val walk = Files.walk(Paths.get(dir))
+        try walk.iterator().asScala.filter(Files.isRegularFile(_))
+          .map(f => Paths.get(dir).relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+        finally walk.close()
+      }
+      val before = files
+      Seq(
+        PartitionedLake.read(spark, dir).filter(col("date_id") === "2024-01-01"),
+        spark.read.parquet(dir).filter(col("v") > 0),
+        spark.read.parquet(s"$dir/date_id=2024-01-02").withColumn("date_id", lit("2024-01-03")),
+        Seq("2024-01-01").toDF("date_id")
+          .join(PartitionedLake.read(spark, dir), Seq("date_id"), "left_semi")
+          .withColumn("v", lit(0L))
+      ).foreach { df =>
+        val e = intercept[AnalysisException](PartitionedLake.writeAll(df, dir, Seq("date_id")))
+        assert(e.getCondition == "UNSUPPORTED_OVERWRITE.PATH")
+        assert(files == before)
+      }
+      // a sibling whose name extends the lake's is not under it
+      val sibling = dir + "_copy"
+      PartitionedLake.writeAll(spark.read.parquet(dir), sibling, Seq("date_id"))
+      PartitionedLake.writeAll(spark.read.parquet(sibling).filter(col("v") > 1), dir, Seq("date_id"))
+      assert(PartitionedLake.read(spark, dir).select("v").as[Long].collect().toSeq == Seq(2L))
+      // a materialized frame no longer reads the lake
+      PartitionedLake.writeAll(PartitionedLake.read(spark, dir).withColumn("v", col("v") * 10)
+        .localCheckpoint(true), dir, Seq("date_id"))
+      assert(PartitionedLake.read(spark, dir).select("v").as[Long].collect().toSeq == Seq(20L))
+    } }
   }
 
   test("a fetched day lands as one file per partition in bronze and in silver") {
-    import org.apache.spark.sql.types._
-    val root = Files.createTempDirectory("graft_lake_files").toString
-    val (bronze, silver) = (s"$root/bronze", s"$root/silver")
-    val schema = StructType(Seq(StructField("name", StringType), StructField("country", StringType),
-      StructField("temp", DoubleType)))
-    def land(day: String): Unit = {
-      val batch = (0 until 240).map { i =>
-        FetchResult(i.toLong, s"https://api.example.test/weather?q=City$i", 200,
-          s"""{"name":"City$i","country":"${if (i % 2 == 0) "US" else "CA"}","temp":${i * 0.5}}""")
+    Seq(Driver, Distributed).foreach { branch => forced(branch) {
+      import org.apache.spark.sql.types._
+      val root = Files.createTempDirectory("graft_lake_files").toString
+      val (bronze, silver) = (s"$root/bronze", s"$root/silver")
+      val schema = StructType(Seq(StructField("name", StringType), StructField("country", StringType),
+        StructField("temp", DoubleType)))
+      def land(day: String): Unit = {
+        val batch = (0 until 240).map { i =>
+          FetchResult(i.toLong, s"https://api.example.test/weather?q=City$i", 200,
+            s"""{"name":"City$i","country":"${if (i % 2 == 0) "US" else "CA"}","temp":${i * 0.5}}""")
+        }
+        val flat = ApiIngest.flattenPayloads(ApiIngest.fromFetchedBatches(spark, batch), schema)
+          .withColumn("date_id", lit(day))
+        PartitionedLake.deleteInsert(flat, bronze, Seq("date_id"))
+        PartitionedLake.deleteInsert(
+          PartitionedLake.read(spark, bronze).filter(col("date_id") === day && col("country") === "US")
+            .withColumn("date_id", col("date_id").cast("string")),
+          silver, Seq("date_id"))
       }
-      val flat = ApiIngest.flattenPayloads(ApiIngest.fromFetchedBatches(spark, batch), schema)
-        .withColumn("date_id", lit(day))
-      PartitionedLake.deleteInsert(flat, bronze, Seq("date_id"))
-      PartitionedLake.deleteInsert(
-        PartitionedLake.read(spark, bronze).filter(col("date_id") === day && col("country") === "US")
-          .withColumn("date_id", col("date_id").cast("string")),
-        silver, Seq("date_id"))
-    }
-    Seq("2024-01-01", "2024-01-02").foreach(land)
-    def parquetFiles(lake: String, day: String) = new java.io.File(s"$lake/date_id=$day").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    for (lake <- Seq(bronze, silver); day <- Seq("2024-01-01", "2024-01-02"))
-      assert(parquetFiles(lake, day) == 1, s"$lake date_id=$day")
-    assert(PartitionedLake.read(spark, silver).count() == 240)
+      Seq("2024-01-01", "2024-01-02").foreach(land)
+      def parquetFiles(lake: String, day: String) = new java.io.File(s"$lake/date_id=$day").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      for (lake <- Seq(bronze, silver); day <- Seq("2024-01-01", "2024-01-02"))
+        assert(parquetFiles(lake, day) == 1, s"$lake date_id=$day")
+      assert(PartitionedLake.read(spark, silver).count() == 240)
+    } }
   }
 }

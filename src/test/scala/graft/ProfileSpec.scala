@@ -22,6 +22,10 @@ class ProfileSpec extends SparkSuite {
     assert(seq(q07("SparkEntry.build_s")).size == Profile.Runs)
     assert(seq(q07("jobs")).nonEmpty)
     assert(seq(q07("jobs")).forall(j => field(j, "site").toString.contains(" at ")))
+    // the jobs adaptive execution submits are named by their operators
+    assert(seq(q07("jobs")).exists(j =>
+      field(j, "site").toString.matches("(.*, )?Exchange at .*")), q07("jobs"))
+    assert(!seq(q07("jobs")).exists(j => field(j, "site").toString.contains("withThreadLocalCaptured")))
     assert(q07("plan").asInstanceOf[String].contains("HashAggregate"))
     assert(seq(q53("streaming.batches")).exists(b =>
       field(b, "durationMs").asInstanceOf[Map[String, Long]].contains("addBatch")))
